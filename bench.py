@@ -368,23 +368,6 @@ def compact_summary(
     return json.dumps({**summary_base, "queries": inline})
 
 
-def prior_inline_names(prior_detail: dict) -> set[str]:
-    """Reconstruct which entries the FROZEN prior round inlined in its
-    summary line, by re-running the same slowest-first budget fill over
-    the archived full timings dict. Used to pin those names into this
-    round's summary so an improving query cannot read as dropped."""
-    timings = prior_detail.get("queries", {})
-    if not timings:
-        return set()
-    base = {
-        k: v
-        for k, v in prior_detail.items()
-        if k not in ("queries", "queries_min")
-    }
-    line = compact_summary(base, timings)
-    return set(json.loads(line).get("queries", {}))
-
-
 def select_movers(
     timings: dict[str, float],
     prior: dict[str, float],
@@ -426,6 +409,18 @@ def select_movers(
     return movers[:cap]
 
 
+def _highest_round(repo_dir: str, stem: str) -> str | None:
+    """Path of the highest-numbered ``{stem}_r{N}.json`` in ``repo_dir``."""
+    best: tuple[int, str] | None = None
+    for fn in os.listdir(repo_dir):
+        m = re.fullmatch(re.escape(stem) + r"_r(\d+)\.json", fn)
+        if m:
+            n = int(m.group(1))
+            if best is None or n > best[0]:
+                best = (n, os.path.join(repo_dir, fn))
+    return best[1] if best else None
+
+
 def frozen_prior_path(repo_dir: str) -> str | None:
     """The mover baseline: the highest-numbered ``BENCH_DETAIL_r{N}.json``
     frozen at a round close. NEVER the live BENCH_DETAIL.json — mid-round
@@ -433,14 +428,39 @@ def frozen_prior_path(repo_dir: str) -> str | None:
     would compare against its own drifted value and escape standalone
     confirmation (exactly how the round-9 sim_lpa_communities/sim_hits
     regressions sailed past the gate)."""
-    best: tuple[int, str] | None = None
-    for fn in os.listdir(repo_dir):
-        m = re.fullmatch(r"BENCH_DETAIL_r(\d+)\.json", fn)
-        if m:
-            n = int(m.group(1))
-            if best is None or n > best[0]:
-                best = (n, os.path.join(repo_dir, fn))
-    return best[1] if best else None
+    return _highest_round(repo_dir, "BENCH_DETAIL")
+
+
+def summary_pin(frozen_bench: dict) -> set[str]:
+    """The names a frozen ``BENCH_r{N}.json`` shows inline in its summary
+    line (``parsed.queries``), read from the artifact itself rather than
+    re-derived, so a name that round pinned stays pinned."""
+    return set(((frozen_bench.get("parsed") or {}).get("queries")) or {})
+
+
+def reset(spark) -> None:
+    """The one between-measurements reset: drop cached relations, release
+    the session's tracked persists and memoized edge list (table plans
+    stay memoized, see cachereg), and nudge the JVM GC."""
+    from odbc2parquet_spark import cachereg
+
+    spark.catalog.clearCache()
+    cachereg.release(spark)
+    spark._jvm.System.gc()
+
+
+def run_query(spark, name: str, sf_dir: str) -> float:
+    """Build query ``name`` and write it to the noop sink under job
+    description ``name``; returns the wall seconds of both."""
+    from odbc2parquet_spark.queries import QUERIES
+
+    spark.sparkContext.setJobDescription(name)
+    try:
+        t0 = time.time()
+        QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+        return time.time() - t0
+    finally:
+        spark.sparkContext.setJobDescription(None)
 
 
 def main() -> None:
@@ -553,31 +573,17 @@ def main() -> None:
                 # the shared-session protocol (round-over-round
                 # comparability); a parallelism measurement needs each
                 # query to pay its own plan.
-                from odbc2parquet_spark import cachereg
-                from odbc2parquet_spark.queries import similarity as QS
-
-                cachereg.release_all()
-                QS._LSH_GRAPH_CACHE.clear()
-                spark.catalog.clearCache()
-                spark._jvm.System.gc()
+                reset(spark)
             if name == "transfer_lineitem":
                 run_transfer()
                 continue
             if name == "bpe_learn_500":
                 run_bpe500()
                 continue
-            fn = QUERIES[name]
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            df.write.mode("overwrite").format("noop").save()
-            samples[name].append(time.time() - t0)
-        # stabilize across reps: drop cached relations and nudge the JVM GC
-        # (release_all empties the cachereg ownership registry — clearCache
-        # already dropped the blocks, this keeps the tracked-frame list from
-        # growing across reps)
-        from odbc2parquet_spark import cachereg
-
-        cachereg.release_all()
+            samples[name].append(run_query(spark, name, sf_dir))
+        # stabilize across reps: drop cached relations (the tracked
+        # persists' blocks too) and nudge the JVM GC; unlike reset(), the
+        # memoized edge list and table plans carry over
         spark.catalog.clearCache()
         spark._jvm.System.gc()
 
@@ -620,13 +626,8 @@ def main() -> None:
             # a flaky confirm run must not discard the whole suite's
             # measurements — record the failure and keep going
             try:
-                spark.catalog.clearCache()
-                spark._jvm.System.gc()
-                t0 = time.time()
-                QUERIES[name](spark, sf_dir).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-                standalone = round(time.time() - t0, 3)
+                reset(spark)
+                standalone = round(run_query(spark, name, sf_dir), 3)
             except Exception as exc:  # noqa: BLE001
                 # None, not a numeric sentinel: a -1.0 would read as a huge
                 # speedup in any downstream ratio over this artifact
@@ -677,10 +678,11 @@ def main() -> None:
     # line so a query that got FASTER (and fell off the slow list) still
     # appears — without this, summary-diffing reads improvements as drops
     pin: set[str] = set()
-    if not only and prior_path:
+    pin_path = _highest_round(repo_dir, "BENCH")
+    if not only and pin_path:
         try:
-            with open(prior_path) as fh:
-                pin = prior_inline_names(json.load(fh))
+            with open(pin_path) as fh:
+                pin = summary_pin(json.load(fh))
         except Exception:  # noqa: BLE001 - a corrupt prior must not kill the bench
             pin = set()
 

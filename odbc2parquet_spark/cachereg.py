@@ -1,44 +1,143 @@
-"""Explicit ownership for within-query ``persist()`` frames.
+"""The session-scoped cache: the one holder of state that outlives a query.
 
-Several queries persist a narrow intermediate that their own plan reads
-multiple times (the curation survivor tables, dd_band_curve's truth
-table). The query contract returns a LAZY DataFrame, so the query
-function cannot unpersist after "the final action" — it never sees it.
-Unowned, those cache entries accumulate in the session's CacheManager
-until LRU eviction (the round-11 judge's item 3: fine under the bench's
-clearCache-per-rep protocol, a slow leak in a long-lived session).
+Two kinds of state live here, both keyed by the Spark applicationId, so
+one application's calls never see or drop another's entries:
 
-The contract: a query that persists calls :func:`track` on the frame;
-the SESSION owner (bench rep loop, driver harness, a production caller
-composing queries) calls :func:`release_all` once it is done with the
-returned results. Releasing is always safe — an unpersisted frame
-recomputes if re-executed — and idempotent.
+* **Memoized values** (:func:`memo`): a value built once per (application,
+  key) and reused while the content fingerprint of its source ``path``
+  (sorted name, size and mtime_ns of every file under it) is unchanged.
+  Two users: ``catalog.load_table`` memoizes the lazy DataFrame of each
+  table (``spark.read.parquet`` pays ~87ms of listing and schema
+  inference per call, and a bench pass calls it several hundred times),
+  and ``queries.similarity._lsh_graph_pairs`` memoizes the checkpointed
+  LSH edge list the graph family shares. A regenerated source directory
+  (tools/make_sfbig rewriting ``.sfdata``, even within one second)
+  changes the fingerprint, and the rebuilt value replaces the entry in
+  place, so the memo is bounded by the number of live keys.
+* **Tracked frames** (:func:`track`): ``persist()``-ed intermediates a
+  query's own plan reads several times. The query contract returns a LAZY
+  DataFrame, so the query cannot unpersist after "the final action"; the
+  session owner does, through :func:`release`.
+
+:func:`release` is the reset a session owner (bench rep loop, measurement
+tools, a production caller composing queries) calls once it is done with
+the results. For the calling application only, it
+
+* unpersists every tracked frame, and
+* drops every memoized value that is itself a tracked frame — the LSH
+  edge list, whose checkpoint blocks the ContextCleaner then reclaims;
+
+and it keeps the memoized table plans: they pin no executor storage and
+invalidate themselves by fingerprint. ``spark.catalog.clearCache()``
+alone drops the persisted blocks but keeps both memos. Releasing is
+always safe (an unpersisted frame recomputes if re-executed) and
+idempotent.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import os
+import threading
+from collections.abc import Callable, Hashable
+from typing import TypeVar
 
-_TRACKED: list[DataFrame] = []
+from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
+
+
+class _AppState:
+    def __init__(self) -> None:
+        self.memo: dict[Hashable, tuple[tuple, object]] = {}
+        self.tracked: list[DataFrame] = []
+
+
+#: applicationId -> that application's state. A process runs one
+#: SparkContext at a time, so a new applicationId means the previous one
+#: stopped: its state (dead RDD handles) is dropped when the new one starts.
+_STATE: dict[str, _AppState] = {}
+#: guards every read-modify-write of _STATE and its entries; never held
+#: while a value is built or a frame unpersisted
+_LOCK = threading.Lock()
+
+
+def _state(spark: SparkSession) -> _AppState:
+    """The caller holds _LOCK."""
+    app = spark.sparkContext.applicationId
+    st = _STATE.get(app)
+    if st is None:
+        _STATE.clear()
+        st = _STATE[app] = _AppState()
+    return st
+
+
+def _fingerprint(path: str) -> tuple:
+    """Sorted (relative name, size, mtime_ns) of every file under
+    ``path`` (or of the file itself). Nanosecond mtimes plus sizes catch
+    a same-second rewrite that a coarse directory mtime would miss."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    out = []
+    for base, _dirs, files in os.walk(path):
+        for f in files:
+            p = os.path.join(base, f)
+            st = os.stat(p)
+            out.append((os.path.relpath(p, path), st.st_size, st.st_mtime_ns))
+    out.sort()
+    return tuple(out)
+
+
+def memo(spark: SparkSession, key: Hashable, path: str, build: Callable[[], T]) -> T:
+    """``build()``'s value, memoized per (application, ``key``) while the
+    content fingerprint of ``path`` is unchanged. A path that cannot be
+    stat-ed locally (a remote URI) is never memoized."""
+    try:
+        fp = _fingerprint(path)
+    except OSError:
+        return build()
+    with _LOCK:
+        hit = _state(spark).memo.get(key)
+    if hit is not None and hit[0] == fp:
+        return hit[1]  # type: ignore[return-value]
+    value = build()
+    with _LOCK:
+        _state(spark).memo[key] = (fp, value)
+    return value
 
 
 def track(df: DataFrame) -> DataFrame:
-    """Register a persisted frame for later release; returns it."""
-    _TRACKED.append(df)
+    """Register a persisted frame under its own application for later
+    release; returns it."""
+    with _LOCK:
+        _state(df.sparkSession).tracked.append(df)
     return df
 
 
-def release_all() -> int:
-    """Unpersist every tracked frame (non-blocking); returns the count.
-
-    Call between queries in a long-lived session, or alongside
-    ``spark.catalog.clearCache()`` to keep this registry from growing.
-    """
-    n = len(_TRACKED)
-    for df in _TRACKED:
+def release(spark: SparkSession) -> int:
+    """Unpersist ``spark``'s tracked frames (non-blocking) and drop its
+    memoized values that are tracked frames; returns the number of
+    tracked frames released. Table plans stay memoized."""
+    with _LOCK:
+        st = _state(spark)
+        tracked, st.tracked = st.tracked, []
+        ids = {id(df) for df in tracked}
+        st.memo = {k: v for k, v in st.memo.items() if id(v[1]) not in ids}
+    for df in tracked:
         try:
             df.unpersist()
         except Exception:  # noqa: BLE001 - a dead session must not raise
             pass
-    _TRACKED.clear()
-    return n
+    return len(tracked)
+
+
+def memoized(spark: SparkSession) -> dict[Hashable, object]:
+    """A copy of ``spark``'s memoized values by key (for inspection)."""
+    with _LOCK:
+        return {k: v for k, (_fp, v) in _state(spark).memo.items()}
+
+
+def tracked(spark: SparkSession) -> list[DataFrame]:
+    """A copy of ``spark``'s tracked frames (for inspection)."""
+    with _LOCK:
+        return list(_state(spark).tracked)

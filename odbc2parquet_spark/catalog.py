@@ -14,6 +14,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from odbc2parquet_spark import cachereg
+
 #: table names the driver generates at every scale factor (TESTDATA.md)
 TABLES = (
     "region",
@@ -33,44 +35,6 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-#: (applicationId, path) -> (content fingerprint, lazy DataFrame).
-#: PLAN-level memo only — nothing is computed or pinned in executor
-#: storage; execution always scans the parquet files.
-#: ``spark.read.parquet`` costs ~87ms per call (directory listing +
-#: footer/schema inference + analysis), and a full bench pass calls
-#: load_table several hundred times (the composed queries alone re-load
-#: the same tables many times), so the repeated inference was ~10% of
-#: the suite. The fingerprint (per-entry mtime_ns + sizes, not just the
-#: directory mtime, which has 1s granularity on some filesystems) drops
-#: the memo when a directory is regenerated (tools/make_sfbig rewriting
-#: .sfdata — the round-10 advisor's stale-cache hazard), and the
-#: applicationId drops it across session restarts. Keying on
-#: (appId, path) alone — the fingerprint lives in the VALUE — means a
-#: regeneration replaces the entry in place, so the memo is bounded by
-#: the number of distinct live table paths (the round-11 judge's
-#: unbounded-growth note).
-_TABLE_MEMO: dict[tuple[str, str], tuple[tuple, DataFrame]] = {}
-
-
-def _content_fingerprint(path: str) -> tuple:
-    """Cheap content identity for a parquet file-or-directory: the
-    sorted (name, size, mtime_ns) of the direct children (or of the
-    file itself). Nanosecond mtimes plus sizes catch a same-second
-    rewrite that a coarse directory mtime would miss; listing a table
-    directory is microseconds next to the ~87ms schema inference the
-    memo avoids."""
-    st = os.stat(path)
-    if not os.path.isdir(path):
-        return (st.st_size, st.st_mtime_ns)
-    entries = []
-    with os.scandir(path) as it:
-        for e in it:
-            s = e.stat()
-            entries.append((e.name, s.st_size, s.st_mtime_ns))
-    entries.sort()
-    return tuple(entries)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table; normalizes the ``events`` nanosecond timestamp.
 
@@ -81,38 +45,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     and ``ts_ns`` as the exact epoch-ns long — the same dual representation
     the reference uses for precision>=7 timestamps (SURVEY §1: ns kept as
     INT64 because the engine's native timestamp is µs).
+
+    The lazy frame is memoized in :mod:`cachereg` until the file changes:
+    a plan-level memo only, nothing is computed or pinned in executor
+    storage, and execution always scans the parquet files.
     """
     path = table_path(sf_dir, name)
-    try:
-        key = (spark.sparkContext.applicationId, path)
-        fp = _content_fingerprint(path)
-    except OSError:
-        key = None
-        fp = None
-    if key is not None:
-        hit = _TABLE_MEMO.get(key)
-        if hit is not None and hit[0] == fp:
-            return hit[1]
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = spark.read.parquet(path)
-        if dict(raw.dtypes).get("ts") == "bigint":
-            out = raw.select(
-                "event_id",
-                F.expr("CAST(timestamp_micros(ts div 1000) AS timestamp_ntz)").alias("ts"),
-                F.col("ts").alias("ts_ns"),
-                "user_id",
-                "event_type",
-                "value",
-                "props",
-            )
-        else:
-            out = raw
-    else:
-        out = spark.read.parquet(path)
-    if key is not None:
-        _TABLE_MEMO[key] = (fp, out)
-    return out
+    return cachereg.memo(spark, ("table", path), path, lambda: _read(spark, path, name))
+
+
+def _read(spark: SparkSession, path: str, name: str) -> DataFrame:
+    if name != "events":
+        return spark.read.parquet(path)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    raw = spark.read.parquet(path)
+    if dict(raw.dtypes).get("ts") != "bigint":
+        return raw
+    return raw.select(
+        "event_id",
+        F.expr("CAST(timestamp_micros(ts div 1000) AS timestamp_ntz)").alias("ts"),
+        F.col("ts").alias("ts_ns"),
+        "user_id",
+        "event_type",
+        "value",
+        "props",
+    )
 
 
 def spread_scan(df: DataFrame) -> DataFrame:
@@ -138,7 +95,8 @@ def spread_scan(df: DataFrame) -> DataFrame:
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     try:
-        if not df.inputFiles() or len(df.inputFiles()) >= target:
+        files = df.inputFiles()
+        if not files or len(files) >= target:
             return df
     except Exception:  # noqa: BLE001 - non-file-backed plans stay as-is
         return df

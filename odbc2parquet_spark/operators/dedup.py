@@ -348,11 +348,6 @@ def minhash_near_duplicates(
 # -------------------------------------------------------------- SimHash
 
 
-def _word_hash32() -> F.Column:
-    """Deterministic 32-bit word hash from md5 (oracle-reproducible)."""
-    return F.conv(F.substring(F.md5(F.col("w")), 1, 8), 16, 10).cast("long")
-
-
 def simhash(docs: DataFrame, bits: int = 32, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Unweighted SimHash over distinct words: (id, simhash).
 

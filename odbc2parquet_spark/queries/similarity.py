@@ -8,78 +8,44 @@ engines compute the same signatures from first principles.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from odbc2parquet_spark.catalog import load_table
+from odbc2parquet_spark import cachereg
+from odbc2parquet_spark.catalog import load_table, table_path
 from odbc2parquet_spark.operators import similarity as S
 from odbc2parquet_spark.queries import query
 
 _N_PLANES = 16
 _DIM = 64
 
-#: one materialized LSH similarity-graph edge list per (application, sf_dir),
-#: shared by the graph family (PageRank, PPR, HITS, LPA, clustering coeff).
-#: A real pipeline builds the similarity graph ONCE and runs every graph
-#: analysis over it; re-deriving the signatures + bucket join per query paid
-#: the dominant cost of each graph query five times over. localCheckpoint
-#: (not persist) because the fixpoint operators need the edge list's
-#: LOGICAL plan truncated — a lazy persist caches blocks but re-embeds the
-#: full LSH plan at every per-round reference, and Catalyst re-analysis then
-#: dominates wall time (measured 2-2.5x on sim_hits/sim_lpa_communities).
-#: The cache holds the pair list (near-dup-pair-sized, orders of magnitude
-#: smaller than the corpus at 100 TB); stale applications are pruned on
-#: insert so a restarted session cannot pin dead RDD handles.
-_LSH_GRAPH_CACHE: dict[tuple[str, str, tuple], DataFrame] = {}
-
-
-def _emb_fingerprint(sf_dir: str) -> tuple:
-    """(path, mtime_ns, size) of every file under embeddings.parquet, so a
-    regenerated corpus (e.g. tools/make_sfbig rewriting .sfdata mid-session)
-    invalidates the memoized edge list instead of silently serving a stale
-    checkpoint."""
-    root = os.path.join(sf_dir, "embeddings.parquet")
-    if os.path.isfile(root):
-        st = os.stat(root)
-        return ((root, st.st_mtime_ns, st.st_size),)
-    out = []
-    for base, _dirs, files in os.walk(root):
-        for f in sorted(files):
-            p = os.path.join(base, f)
-            st = os.stat(p)
-            out.append((p, st.st_mtime_ns, st.st_size))
-    return tuple(out)
-
 
 def _lsh_graph_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical (id_a < id_b) LSH bucket pairs over ``embeddings`` at the
     graph family's frozen operating point (16 planes, prefix_bits=8),
-    eagerly checkpointed and memoized per (application, sf_dir,
-    data-fingerprint)."""
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, _emb_fingerprint(sf_dir))
-    cached = _LSH_GRAPH_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # prune dead applications AND superseded fingerprints of this sf_dir
-    # (a regenerated corpus must not leave the old checkpoint pinned)
-    for stale in [
-        k
-        for k in _LSH_GRAPH_CACHE
-        if k[0] != app or (k[1] == sf_dir and k != key)
-    ]:
-        del _LSH_GRAPH_CACHE[stale]
-    emb = load_table(spark, sf_dir, "embeddings")
-    sig = S.lsh_signatures(emb, _N_PLANES, _DIM)
-    pairs = (
-        S.lsh_bucket_pairs(sig, prefix_bits=8)
-        .select("id_a", "id_b")
-        .localCheckpoint(eager=True)
-    )
-    _LSH_GRAPH_CACHE[key] = pairs
-    return pairs
+    eagerly checkpointed and memoized in :mod:`cachereg` per (application,
+    sf_dir) until the embeddings file changes.
+
+    One edge list is shared by the graph family (PageRank, PPR, HITS, LPA,
+    clustering coeff): a real pipeline builds the similarity graph ONCE
+    and runs every graph analysis over it; re-deriving the signatures +
+    bucket join per query paid the dominant cost of each graph query five
+    times over. localCheckpoint (not persist) because the fixpoint
+    operators need the edge list's LOGICAL plan truncated — a lazy
+    persist caches blocks but re-embeds the full LSH plan at every
+    per-round reference, and Catalyst re-analysis then dominates wall time
+    (measured 2-2.5x on sim_hits/sim_lpa_communities). The frame is
+    tracked, so ``cachereg.release`` drops it."""
+
+    def build() -> DataFrame:
+        emb = load_table(spark, sf_dir, "embeddings")
+        sig = S.lsh_signatures(emb, _N_PLANES, _DIM)
+        pairs = S.lsh_bucket_pairs(sig, prefix_bits=8).select("id_a", "id_b")
+        return cachereg.track(pairs.localCheckpoint(eager=True))
+
+    path = table_path(sf_dir, "embeddings")
+    return cachereg.memo(spark, ("lsh_graph_pairs", sf_dir), path, build)
+
 
 _DOT = (
     "list_sum(list_transform(list_zip(a.embedding, b.embedding), "

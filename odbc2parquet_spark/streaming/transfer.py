@@ -142,21 +142,6 @@ def streaming_exact_dedup(
     return hashed.dropDuplicates(["content_hash"])
 
 
-def streaming_quality_gate(
-    docs: DataFrame, min_quality: float = 0.5, text_col: str = "text"
-) -> DataFrame:
-    """Stateless streaming quality filter: the batch quality_scores
-    expression applied per micro-batch (narrow, no state) — the gate you
-    run INSIDE ingestion so rejected documents never land on disk."""
-    from odbc2parquet_spark.operators.text import quality_scores
-
-    scored = quality_scores(docs, text_col)
-    return (
-        docs.join(scored.select("doc_id", "quality_score"), "doc_id")
-        .filter(F.col("quality_score") >= min_quality)
-    )
-
-
 def late_event_audit(
     events: DataFrame,
     delay_seconds: int = 600,

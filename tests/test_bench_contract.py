@@ -52,12 +52,13 @@ def test_summary_pins_prior_inline_names():
     # inline when it was inline in the frozen prior round — otherwise
     # round-over-round summary diffing reads the improvement as a drop
     # (the r11 PERF artifact's 3 phantom "dropped_from_bench" entries)
-    from bench import prior_inline_names
+    from bench import summary_pin
 
     timings = {f"q_quite_long_query_name_{i:04d}": 0.1 + i * 0.013 for i in range(300)}
     timings["transfer_lineitem"] = 1.7
-    prior_detail = {**_base(len(timings)), "queries": dict(timings)}
-    pin = prior_inline_names(prior_detail)
+    # the pin comes from the frozen summary artifact (BENCH_r{N}.json)
+    frozen = {"parsed": json.loads(compact_summary(_base(len(timings)), timings))}
+    pin = summary_pin(frozen)
     assert pin  # the budget fits a few dozen entries
     # one pinned entry gets 10x faster this round: it would no longer
     # make the slowest-first cut, but the pin keeps it inline
@@ -71,6 +72,17 @@ def test_summary_pins_prior_inline_names():
     # and without the pin it would have vanished (guards the premise)
     unpinned = json.loads(compact_summary(_base(len(now)), now))
     assert improved not in unpinned["queries"]
+    # the next round reads this round's printed line, so the name stays
+    # pinned instead of dropping out one round later
+    assert improved in summary_pin({"parsed": parsed})
+
+
+def test_summary_pin_tolerates_unparsed_round():
+    from bench import summary_pin
+
+    # BENCH_r04.json has "parsed": null (its summary line was truncated)
+    assert summary_pin({"parsed": None}) == set()
+    assert summary_pin({}) == set()
 
 
 def test_scaling_set_is_benchable():
@@ -187,19 +199,101 @@ def test_select_movers_min_filter_clears_noise_collisions():
 def test_cachereg_tracks_and_releases(spark, sf_dir):
     """The cache-ownership contract (round-11 judge item 3): a query
     that persists an intermediate must register it in cachereg, and
-    release_all() must actually drop the cached blocks so a long-lived
+    release(spark) must actually drop the cached blocks so a long-lived
     session does not accumulate MEMORY_AND_DISK entries."""
     from odbc2parquet_spark import cachereg
     from odbc2parquet_spark.queries import QUERIES
 
-    cachereg.release_all()  # clean slate
+    cachereg.release(spark)  # clean slate
     df = QUERIES["tx_curation_pipeline"](spark, sf_dir)
-    assert cachereg._TRACKED, "curation persist was not tracked"
-    tracked = list(cachereg._TRACKED)
+    assert cachereg.tracked(spark), "curation persist was not tracked"
+    tracked = cachereg.tracked(spark)
     df.write.mode("overwrite").format("noop").save()
     assert any(t.storageLevel.useMemory or t.storageLevel.useDisk for t in tracked)
-    n = cachereg.release_all()
+    n = cachereg.release(spark)
     assert n == len(tracked)
-    assert not cachereg._TRACKED
+    assert not cachereg.tracked(spark)
     for t in tracked:
         assert not (t.storageLevel.useMemory or t.storageLevel.useDisk)
+
+
+def test_cache_lifetimes_clearcache_vs_release(spark, sf_dir):
+    """What survives which reset: ``clearCache()`` (the between-pass and
+    between-rep step) keeps the memoized edge list and table plans;
+    ``cachereg.release`` (inside ``bench.reset``) unpersists the tracked
+    frames and drops the edge list but keeps the table plans."""
+    from odbc2parquet_spark import cachereg
+    from odbc2parquet_spark.catalog import table_path
+    from odbc2parquet_spark.queries import QUERIES
+
+    cachereg.release(spark)
+    for name in ("sim_pagerank", "tx_curation_pipeline"):
+        QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+    memo = cachereg.memoized(spark)
+    edges = memo[("lsh_graph_pairs", sf_dir)]
+    table_keys = {k for k in memo if k[0] == "table"}
+    assert ("table", table_path(sf_dir, "embeddings")) in table_keys
+    tracked = cachereg.tracked(spark)
+    persisted = [t for t in tracked if t.storageLevel.useMemory or t.storageLevel.useDisk]
+    assert persisted
+
+    spark.catalog.clearCache()
+    memo = cachereg.memoized(spark)
+    assert memo[("lsh_graph_pairs", sf_dir)] is edges
+    assert table_keys <= set(memo)
+
+    assert cachereg.release(spark) == len(tracked)
+    memo = cachereg.memoized(spark)
+    assert ("lsh_graph_pairs", sf_dir) not in memo
+    assert table_keys <= set(memo)
+    assert not cachereg.tracked(spark)
+    for t in persisted:
+        assert not (t.storageLevel.useMemory or t.storageLevel.useDisk)
+
+
+def test_cachereg_track_release_race(spark):
+    """track() from more threads than cores racing release(): every
+    tracked frame is released exactly once and counted once."""
+    import threading
+
+    from odbc2parquet_spark import cachereg
+
+    class Frame:
+        sparkSession = spark
+
+        def __init__(self):
+            self.unpersisted = 0
+
+        def unpersist(self):
+            self.unpersisted += 1
+
+    cachereg.release(spark)
+    frames = [[Frame() for _ in range(200)] for _ in range(2 * (os.cpu_count() or 4))]
+    released: list[int] = []
+    done = threading.Event()
+
+    def releaser():
+        while not done.is_set():
+            released.append(cachereg.release(spark))
+
+    trackers = [
+        threading.Thread(target=lambda fs=fs: [cachereg.track(f) for f in fs])
+        for fs in frames
+    ]
+    rel = threading.Thread(target=releaser)
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        rel.start()
+        for t in trackers:
+            t.start()
+        for t in trackers:
+            t.join(timeout=120)
+        done.set()
+        rel.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not rel.is_alive() and not any(t.is_alive() for t in trackers)
+    released.append(cachereg.release(spark))
+    assert sum(released) == sum(len(fs) for fs in frames)
+    assert all(f.unpersisted == 1 for fs in frames for f in fs)

@@ -834,11 +834,12 @@ def test_lsh_graph_pairs_memo_keyed_by_sf_dir(spark):
     # (application, sf_dir); a key bug would silently serve one scale's
     # edges to another scale's query in the same session
     import odbc2parquet_spark.queries.similarity as QS
+    from odbc2parquet_spark import cachereg
 
-    QS._LSH_GRAPH_CACHE.clear()
+    cachereg.release(spark)
     a = QS._lsh_graph_pairs(spark, "/root/testdata/sf0.001")
     b = QS._lsh_graph_pairs(spark, "/root/testdata/sf0.01")
-    assert len(QS._LSH_GRAPH_CACHE) == 2
+    assert len([k for k in cachereg.memoized(spark) if k[0] == "lsh_graph_pairs"]) == 2
     assert a.count() != b.count()
     # same key -> the SAME checkpointed frame, not a rebuild
     assert QS._lsh_graph_pairs(spark, "/root/testdata/sf0.001") is a

@@ -4,7 +4,8 @@
 
 For each query, alternates REPS pairs of (A: natural layout, B: load_table
 wrapped in spread_scan for <table>) inside ONE session, cold caches per
-rep (the judge/standalone protocol), and prints both medians and mins.
+rep (``bench.reset`` then ``bench.run_query``, the standalone protocol),
+and prints both medians and mins.
 The B variant monkeypatches the query module's `load_table` reference —
 measurement only; a win is landed as an explicit call-site edit.
 
@@ -16,10 +17,10 @@ $SPARK_GRAFT_BENCH_REPS (default 3 pairs).
 
 from __future__ import annotations
 
+import importlib
 import os
 import statistics
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -31,9 +32,9 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 
-    from odbc2parquet_spark import cachereg, catalog
+    from bench import reset, run_query
+    from odbc2parquet_spark import catalog
     from odbc2parquet_spark.queries import QUERIES
-    from odbc2parquet_spark.queries import similarity as QS
     from odbc2parquet_spark.session import get_spark
 
     spark = get_spark("ab_spread")
@@ -45,28 +46,19 @@ def main() -> None:
         df = orig_load(sp, sfd, name)
         return catalog.spread_scan(df) if name == table else df
 
-    def run(fn, label: str) -> float:
-        spark.catalog.clearCache()
-        QS._LSH_GRAPH_CACHE.clear()
-        cachereg.release_all()
-        spark._jvm.System.gc()
-        spark.sparkContext.setJobDescription(label)
-        t0 = time.time()
-        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        return time.time() - t0
-
-    import importlib
+    def run(qname: str) -> float:
+        reset(spark)
+        return run_query(spark, qname, sf_dir)
 
     for qname in names:
-        fn = QUERIES[qname]
-        mod = importlib.import_module(fn.__module__)
+        mod = importlib.import_module(QUERIES[qname].__module__)
         a_times, b_times = [], []
-        run(fn, f"warmup:{qname}")  # codegen/JIT warmup, untimed
-        for i in range(reps):
-            a_times.append(run(fn, f"A{i}:{qname}"))
+        run(qname)  # codegen/JIT warmup, untimed
+        for _ in range(reps):
+            a_times.append(run(qname))
             mod.load_table = spread_load  # type: ignore[attr-defined]
             try:
-                b_times.append(run(fn, f"B{i}:{qname}"))
+                b_times.append(run(qname))
             finally:
                 mod.load_table = orig_load  # type: ignore[attr-defined]
         print(

@@ -14,10 +14,11 @@ import datetime
 import decimal
 import hashlib
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def canon_cell(v) -> str:
@@ -70,7 +71,6 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
-    import os
 
     for t in TABLES:
         p = table_path(sf_dir, t)

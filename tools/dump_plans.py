@@ -4,11 +4,12 @@
 
 Writes plans/$SPARK_GRAFT_PLANS_ROUND/<query>_<suffix>.txt (default r12) (suffix = before|after) for each
 query, at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1). Uses the
-same lineage-control transparency as tools/plan_audit.py: persist/
-localCheckpoint boundaries taken during construction are recorded and
-each segment's plan is appended, so a composed query's cached subtrees
-appear exactly once instead of vanishing into InMemoryTableScan or
-LogicalRDD leaves.
+same lineage-control transparency as tools/plan_audit.py
+(``recorded_segments``): persist/localCheckpoint boundaries taken during
+construction are recorded and each segment's plan is appended, so a
+composed query's cached subtrees appear exactly once instead of
+vanishing into InMemoryTableScan or LogicalRDD leaves. Each query is
+dumped standalone: ``bench.reset`` runs before it.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from tools.plan_audit import truncate_at_cache  # noqa: E402
+from tools.plan_audit import recorded_segments, truncate_at_cache  # noqa: E402
 
 
 def main() -> None:
@@ -33,37 +34,12 @@ def main() -> None:
 
     from pyspark.sql import DataFrame
 
-    import odbc2parquet_spark.queries.similarity as QS
-    from odbc2parquet_spark import cachereg
+    from bench import reset
     from odbc2parquet_spark.queries import QUERIES
     from odbc2parquet_spark.session import get_spark
 
     spark = get_spark("dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
-
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame as ConcreteDF
-    except ImportError:  # older PySpark: the facade IS the concrete class
-        ConcreteDF = DataFrame
-
-    # Explain text is captured EAGERLY at the persist/localCheckpoint
-    # call site: once persist() registers the plan in the CacheManager,
-    # explaining the same frame collapses to an InMemoryTableScan and the
-    # segment's real subtree is lost.
-    segments: list[tuple[str, str]] = []
-    orig_checkpoint = ConcreteDF.localCheckpoint
-    orig_persist = ConcreteDF.persist
-
-    def recording_checkpoint(self, eager=True):
-        segments.append(("localCheckpoint", fmt(self)))
-        return orig_checkpoint(self, eager=eager)
-
-    def recording_persist(self, *args, **kwargs):
-        segments.append(("persist", fmt(self)))
-        return orig_persist(self, *args, **kwargs)
-
-    ConcreteDF.localCheckpoint = recording_checkpoint
-    ConcreteDF.persist = recording_persist
 
     def fmt(df: DataFrame) -> str:
         plan = df._jdf.queryExecution().explainString(
@@ -78,41 +54,33 @@ def main() -> None:
         head, *rest = plan.split("\n\n", 1)
         return "\n\n".join([truncate_at_cache(head), *rest])
 
-    try:
-        for name in names:
-            QS._LSH_GRAPH_CACHE.clear()
-            segments.clear()
+    for name in names:
+        reset(spark)
+        # explain text is captured EAGERLY at the boundary call site
+        with recorded_segments(fmt) as segments:
             df = QUERIES[name](spark, sf_dir)
-            parts = [f"# {name} @ {sf_dir} — explain('formatted'), {suffix}\n"]
-            texts = []
-            for i, (kind, t) in enumerate(segments):
-                texts.append(t)
-                parts.append(f"\n## segment {i}: pre-{kind} subtree\n\n" + t)
-            t = fmt(df)
+        parts = [f"# {name} @ {sf_dir} — explain('formatted'), {suffix}\n"]
+        texts = []
+        for i, (kind, t) in enumerate(segments):
             texts.append(t)
-            parts.append("\n## final frame\n\n" + t)
-            # executed-work summary over the cache-truncated trees (each
-            # cached subtree counted once, in its own segment)
-            trees = [x.split("\n\n", 1)[0] for x in texts]
-            n_scan = sum(t.count("Scan parquet") for t in trees)
-            n_exch = sum(
-                t.count("Exchange") - t.count("BroadcastExchange")
-                for t in trees
-            )
-            parts.insert(
-                1,
-                f"\nexecuted-plan summary: parquet scans={n_scan}, "
-                f"shuffle exchanges={n_exch}, segments={len(texts) - 1}\n",
-            )
-            path = os.path.join(out_dir, f"{name}_{suffix}.txt")
-            with open(path, "w") as fh:
-                fh.write("".join(parts))
-            print(f"wrote {path}")
-            spark.catalog.clearCache()
-            cachereg.release_all()
-    finally:
-        ConcreteDF.localCheckpoint = orig_checkpoint
-        ConcreteDF.persist = orig_persist
+            parts.append(f"\n## segment {i}: pre-{kind} subtree\n\n" + t)
+        t = fmt(df)
+        texts.append(t)
+        parts.append("\n## final frame\n\n" + t)
+        # executed-work summary over the cache-truncated trees (each
+        # cached subtree counted once, in its own segment)
+        trees = [x.split("\n\n", 1)[0] for x in texts]
+        n_scan = sum(t.count("Scan parquet") for t in trees)
+        n_exch = sum(t.count("Exchange") - t.count("BroadcastExchange") for t in trees)
+        parts.insert(
+            1,
+            f"\nexecuted-plan summary: parquet scans={n_scan}, "
+            f"shuffle exchanges={n_exch}, segments={len(texts) - 1}\n",
+        )
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as fh:
+            fh.write("".join(parts))
+        print(f"wrote {path}")
 
 
 if __name__ == "__main__":

@@ -17,10 +17,12 @@ localCheckpoint AND persist taken while a query is constructed, explains
 each recorded segment plus the final frame, truncates every explained tree
 at InMemoryTableScan (each cached subtree is counted exactly once, in its
 own segment — matching what the runtime computes), and sums the statistics.
+Each query is audited standalone: ``bench.reset`` runs before it.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 import sys
@@ -61,37 +63,12 @@ def truncate_at_cache(tree: str) -> str:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
-    from pyspark.sql import DataFrame
-
-    import odbc2parquet_spark.queries.similarity as QS
+    from bench import reset
     from odbc2parquet_spark.queries import QUERIES
     from odbc2parquet_spark.session import get_spark
 
     spark = get_spark("plan_audit")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # PySpark 4 routes sessions through pyspark.sql.classic.dataframe
-    # (the facade base class's methods are overridden there) — patch the
-    # concrete class actually dispatching the calls
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame as ConcreteDF
-    except ImportError:  # older PySpark: the facade IS the concrete class
-        ConcreteDF = DataFrame
-
-    segments: list[DataFrame] = []
-    orig_checkpoint = ConcreteDF.localCheckpoint
-    orig_persist = ConcreteDF.persist
-
-    def recording_checkpoint(self, eager=True):
-        segments.append(self)
-        return orig_checkpoint(self, eager=eager)
-
-    def recording_persist(self, *args, **kwargs):
-        segments.append(self)
-        return orig_persist(self, *args, **kwargs)
-
-    ConcreteDF.localCheckpoint = recording_checkpoint
-    ConcreteDF.persist = recording_persist
 
     def explain_stats(df):
         plan = df._jdf.queryExecution().explainString(
@@ -112,28 +89,23 @@ def main() -> None:
         return exch, single, bhj, smj, pushed, quad
 
     rows = []
-    try:
-        for name in sorted(QUERIES):
-            # each query audits standalone: the cross-query edge-list memo
-            # would otherwise hide the LSH build segment from every graph
-            # query after the first
-            QS._LSH_GRAPH_CACHE.clear()
-            segments.clear()
+    for name in sorted(QUERIES):
+        # standalone: the cross-query edge-list memo would otherwise hide
+        # the LSH build segment from every graph query after the first
+        reset(spark)
+        with recorded_segments(lambda df: df) as segments:
             df = QUERIES[name](spark, sf_dir)
-            exch = single = bhj = smj = 0
-            pushed = quad = False
-            for seg in [*segments, df]:
-                e, s, b, m, p, q = explain_stats(seg)
-                exch += e
-                single += s
-                bhj += b
-                smj += m
-                pushed = pushed or p
-                quad = quad or q
-            rows.append((name, max(exch - single, 0), single, bhj, smj, pushed, quad))
-    finally:
-        ConcreteDF.localCheckpoint = orig_checkpoint
-        ConcreteDF.persist = orig_persist
+        exch = single = bhj = smj = 0
+        pushed = quad = False
+        for seg in [*(frame for _kind, frame in segments), df]:
+            e, s, b, m, p, q = explain_stats(seg)
+            exch += e
+            single += s
+            bhj += b
+            smj += m
+            pushed = pushed or p
+            quad = quad or q
+        rows.append((name, max(exch - single, 0), single, bhj, smj, pushed, quad))
 
     with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write(
@@ -157,6 +129,42 @@ def main() -> None:
                 f"| {'y' if pushed else ''} | {'Y' if quad else ''} |\n"
             )
     print(f"wrote PLANS.md ({len(rows)} queries)")
+
+
+@contextlib.contextmanager
+def recorded_segments(capture):
+    """While active, every ``localCheckpoint``/``persist`` call appends
+    ``(kind, capture(frame))`` to the yielded list, ``capture`` running
+    on the frame BEFORE the boundary is taken (once persist() registers
+    a plan in the CacheManager, explaining it collapses to an
+    InMemoryTableScan and the segment's real subtree is lost)."""
+    # PySpark 4 routes sessions through pyspark.sql.classic.dataframe
+    # (the facade base class's methods are overridden there) — patch the
+    # concrete class actually dispatching the calls
+    try:
+        from pyspark.sql.classic.dataframe import DataFrame as ConcreteDF
+    except ImportError:  # older PySpark: the facade IS the concrete class
+        from pyspark.sql import DataFrame as ConcreteDF
+
+    segments: list = []
+    orig_checkpoint = ConcreteDF.localCheckpoint
+    orig_persist = ConcreteDF.persist
+
+    def recording_checkpoint(self, eager=True):
+        segments.append(("localCheckpoint", capture(self)))
+        return orig_checkpoint(self, eager=eager)
+
+    def recording_persist(self, *args, **kwargs):
+        segments.append(("persist", capture(self)))
+        return orig_persist(self, *args, **kwargs)
+
+    ConcreteDF.localCheckpoint = recording_checkpoint
+    ConcreteDF.persist = recording_persist
+    try:
+        yield segments
+    finally:
+        ConcreteDF.localCheckpoint = orig_checkpoint
+        ConcreteDF.persist = orig_persist
 
 
 if __name__ == "__main__":

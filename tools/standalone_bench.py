@@ -2,9 +2,9 @@
 
     python tools/standalone_bench.py <query> [query ...]
 
-Protocol (matches the verify skill / judge): one warm session, per query
-ONE untimed warmup run of the exact plan (codegen/JIT), then N timed reps
-of `clearCache(); System.gc(); noop-sink write`, report median and min.
+Protocol: one warm session; per query ONE untimed warmup run of the exact
+plan (codegen/JIT), then N timed reps, each ``bench.reset`` followed by
+``bench.run_query`` (noop-sink write); report median and min.
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), reps via
 $SPARK_GRAFT_BENCH_REPS (default 3).
 """
@@ -14,7 +14,6 @@ from __future__ import annotations
 import os
 import statistics
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -25,34 +24,21 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 
-    from odbc2parquet_spark.queries import QUERIES
-    from odbc2parquet_spark.queries import similarity as QS
-    from odbc2parquet_spark import cachereg
+    from bench import reset, run_query
     from odbc2parquet_spark.session import get_spark
 
     spark = get_spark("standalone_bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     for name in names:
-        fn = QUERIES[name]
-        spark.catalog.clearCache()
-        QS._LSH_GRAPH_CACHE.clear()
-        cachereg.release_all()
-        spark._jvm.System.gc()
-        spark.sparkContext.setJobDescription(f"warmup:{name}")
-        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+        reset(spark)
+        run_query(spark, name, sf_dir)  # warmup, untimed
         vals = []
-        for i in range(reps):
-            # match the dump_plans/judge protocol: the memoized LSH graph
-            # must not carry a frame built during warmup into a timed rep
-            spark.catalog.clearCache()
-            QS._LSH_GRAPH_CACHE.clear()
-            cachereg.release_all()
-            spark._jvm.System.gc()
-            spark.sparkContext.setJobDescription(f"rep{i}:{name}")
-            t0 = time.time()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            vals.append(time.time() - t0)
+        for _ in range(reps):
+            # the memoized LSH edge list must not carry a frame built
+            # during warmup into a timed rep
+            reset(spark)
+            vals.append(run_query(spark, name, sf_dir))
         print(
             f"{name}: median={statistics.median(vals):.3f} "
             f"min={min(vals):.3f} reps={[round(v, 3) for v in vals]}",

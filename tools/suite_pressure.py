@@ -1,7 +1,8 @@
 """Measure suite-state inflation: run the bench suite once in a fixed
 order, re-running a CANARY query (and sampling JVM health counters) every
-K queries. If the canary's time grows with suite position while its plan
-is constant, the growth IS the suite-pressure carrier; the counters say
+K queries. Each run is ``bench.run_query``, with no ``bench.reset``
+between runs, as inside a bench rep. If the canary's time grows with
+suite position while its plan is constant, the growth IS the suite-pressure carrier; the counters say
 which JVM resource carries it (JIT code cache, metaspace/class count,
 old-gen occupancy, cumulative JIT time).
 
@@ -23,7 +24,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -54,28 +54,22 @@ def main() -> None:
     n_queries = int(sys.argv[1]) if len(sys.argv) > 1 else 10**9
     stride = int(sys.argv[2]) if len(sys.argv) > 2 else 15
 
-    from bench import HEADLINE
-    from odbc2parquet_spark.queries import QUERIES
+    from bench import HEADLINE, run_query
     from odbc2parquet_spark.session import get_spark
 
     spark = get_spark("suite_pressure")
     spark.sparkContext.setLogLevel("ERROR")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    def run(name: str) -> float:
-        t0 = time.time()
-        QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-        return time.time() - t0
-
     # warm the canary once so its first measured point is steady-state
-    run(CANARY)
-    run(CANARY)
+    run_query(spark, CANARY, sf_dir)
+    run_query(spark, CANARY, sf_dir)
 
     suite = [q for q in HEADLINE if q != CANARY][:n_queries]
     points = []
 
     def canary_point(pos: int) -> None:
-        t = round(run(CANARY), 3)
+        t = round(run_query(spark, CANARY, sf_dir), 3)
         row = {"pos": pos, "canary_sec": t, **jvm_stats(spark)}
         points.append(row)
         print(json.dumps(row), flush=True)
@@ -83,7 +77,7 @@ def main() -> None:
     canary_point(0)
     for i, name in enumerate(suite, 1):
         try:
-            run(name)
+            run_query(spark, name, sf_dir)
         except Exception as exc:  # noqa: BLE001 - keep measuring
             print(f"# {name} failed: {exc}", file=sys.stderr)
         if i % stride == 0:
