@@ -414,7 +414,7 @@ def main(argv: list[str] | None = None) -> int:
             from odbc2parquet_spark.sinks.parquet_sink import write_parquet_stdout
 
             df = apply_mapping_options(engine.query(sql, args.params), mapping)
-            write_parquet_stdout(df, sink)
+            write_parquet_stdout(df, sink, column_length_limit=mapping.column_length_limit)
             return 0
         produced = engine.query_to_parquet(
             sql, args.out, params=args.params, sink=sink, mapping=mapping

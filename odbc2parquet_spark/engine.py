@@ -90,7 +90,6 @@ class Engine:
         the result schema before writing — declarative casts, so Catalyst
         still prunes and pushes down beneath them.
         """
-        df = self.query(sql, params)
-        if mapping is not None:
-            df = apply_mapping_options(df, mapping)
-        return write_parquet(df, out_path, sink)
+        mapping = mapping or MappingOptions()
+        df = apply_mapping_options(self.query(sql, params), mapping)
+        return write_parquet(df, out_path, sink, mapping.column_length_limit)

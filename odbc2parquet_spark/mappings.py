@@ -293,8 +293,9 @@ def apply_mapping_options(df, opts: MappingOptions):
 
 #: bytes-per-value estimates used for memory-bounded batch sizing, the
 #: analogue of the reference's bytes-per-row computation feeding
-#: BatchSizeLimit (batch_size_limit.rs:59-109). Strings/binaries use the
-#: declared length when known, else the reference's 4096 default cap.
+#: BatchSizeLimit (batch_size_limit.rs:59-109). Strings are not listed:
+#: :func:`estimate_bytes_per_row` charges them the length limit, the cap
+#: :func:`apply_mapping_options` enforces on them.
 _FIXED_WIDTH = {
     T.BooleanType: 1,
     T.ByteType: 1,
@@ -308,15 +309,24 @@ _FIXED_WIDTH = {
     T.TimestampNTZType: 8,
 }
 
+#: the reference's variadic buffer cap when --column-length-limit is not
+#: given (column_strategy.rs:100-107)
+DEFAULT_LENGTH_LIMIT = 4096
 
-def estimate_bytes_per_row(schema: T.StructType, default_var_len: int = 4096) -> int:
+
+def estimate_bytes_per_row(schema: T.StructType, length_limit: int | None = None) -> int:
+    """Estimated bytes of one row. A string column costs ``length_limit``
+    (--column-length-limit), or 4096 when none is given. Binary and other
+    non-fixed types cost 4096: no length limit is enforced on them."""
     total = 0
     for f in schema.fields:
         w = _FIXED_WIDTH.get(type(f.dataType))
         if w is None:
             if isinstance(f.dataType, T.DecimalType):
                 w = 16
+            elif isinstance(f.dataType, T.StringType):
+                w = length_limit or DEFAULT_LENGTH_LIMIT
             else:
-                w = default_var_len
+                w = DEFAULT_LENGTH_LIMIT
         total += w
     return max(total, 1)

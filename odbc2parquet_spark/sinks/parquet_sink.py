@@ -7,13 +7,17 @@ Reference behaviors reproduced (cites into /root/reference):
 - batch/row-group sizing: rows-per-batch = min(row cap, memory cap /
   bytes-per-row), defaults 65535 rows / 2 GiB (src/query/batch_size_limit.rs).
   Spark analogue: ``maxRecordsPerFile`` + parquet block size; the
-  bytes-per-row estimate reuses the same schema-derived arithmetic.
+  bytes-per-row estimate reuses the same schema-derived arithmetic, with
+  each string column charged the length limit (column_strategy.rs:100-107).
 - file splitting with numeric suffixes ``out_01.par, out_02.par, ...``,
   configurable suffix width, roll on N row groups and/or byte threshold
   (src/query/batch_size_limit.rs:18-55, src/query/parquet_writer.rs:149-189,
   path_with_suffix :232-250). Distributed writes can't name files mid-flight,
   so the exact naming is a deterministic driver-side rename pass after the
-  parallel write — planning unaffected.
+  parallel write — planning unaffected. A byte threshold sizes the staging
+  pass from the length-capped estimate, so a result the estimate places
+  in one file is written by one Spark job; a footer-measured resplit of
+  the staged files is the fallback when the estimate misses.
 - ``--no-empty-file``: suppress output entirely for empty results; default
   writes a schema-only file (src/query/parquet_writer.rs:117-121,155-158).
 - crash-safety: Spark's FileOutputCommitter writes to ``_temporary`` and
@@ -74,7 +78,10 @@ class SinkOptions:
     batch_size_rows: int | None = None  # rows per row-group/file unit
     batch_memory_bytes: int | None = None  # memory cap -> rows via bytes/row
     row_groups_per_file: int = 0  # 0 = no row-group-count splitting
-    file_size_threshold: int = 0  # bytes; 0 = no size splitting
+    #: bytes; 0 = no size splitting. The staging pass is sized from the
+    #: length-capped bytes/row estimate; a footer-measured resplit of the
+    #: staged files is the fallback when the estimate misses.
+    file_size_threshold: int = 0
     suffix_length: int = 2  # width of _NN suffix (parquet_writer.rs:232-250)
     no_empty_file: bool = False
     single_file: bool = False  # CLI-parity: exactly one .par file
@@ -189,7 +196,10 @@ def path_with_suffix(path: str, index: int, suffix_length: int) -> str:
 
 
 def write_parquet_stdout(
-    df: DataFrame, opts: SinkOptions | None = None, out=None
+    df: DataFrame,
+    opts: SinkOptions | None = None,
+    out=None,
+    column_length_limit: int | None = None,
 ) -> int:
     """A8: stream the result as ONE parquet file to stdout (``out`` = '-').
 
@@ -204,7 +214,9 @@ def write_parquet_stdout(
     rejects them for stdout (src/main.rs:447-451).
 
     ``out`` overrides the sink (any writable binary file-like) — used by
-    tests; defaults to ``sys.stdout.buffer``. Returns bytes written.
+    tests; defaults to ``sys.stdout.buffer``. ``column_length_limit`` is
+    --column-length-limit, the cap on a string column's estimated bytes.
+    Returns bytes written.
     """
     import sys
 
@@ -219,7 +231,9 @@ def write_parquet_stdout(
         return 0
 
     schema = to_arrow_schema(df.schema)
-    batch_rows = rows_per_batch(opts, estimate_bytes_per_row(df.schema))
+    batch_rows = rows_per_batch(
+        opts, estimate_bytes_per_row(df.schema, column_length_limit)
+    )
     codec = opts.compression
     kwargs = {}
     if opts.compression_level is not None:
@@ -309,14 +323,22 @@ def write_parquet_stdout(
     return sink.n
 
 
-def write_parquet(df: DataFrame, path: str, opts: SinkOptions | None = None) -> list[str]:
+def write_parquet(
+    df: DataFrame,
+    path: str,
+    opts: SinkOptions | None = None,
+    column_length_limit: int | None = None,
+) -> list[str]:
     """Write ``df`` to parquet with the reference's shaping semantics.
 
     Returns the list of files/directories produced. Directory mode (no
     splitting flags, ``single_file=False``) writes a standard parquet
     directory — the scale path. File mode materializes ``path`` (or
     ``path_with_suffix`` parts) as single .par files via a driver-side
-    rename of the committed part files.
+    rename of the committed part files. ``column_length_limit`` is
+    --column-length-limit, the cap on a string column's estimated bytes
+    (passed here, not carried as column metadata: Spark writes
+    field metadata into the parquet footer).
     """
     opts = opts or SinkOptions()
     file_mode = opts.single_file or opts.row_groups_per_file or opts.file_size_threshold
@@ -330,7 +352,7 @@ def write_parquet(df: DataFrame, path: str, opts: SinkOptions | None = None) -> 
     if opts.no_empty_file and df.isEmpty():
         return []
 
-    bpr = estimate_bytes_per_row(df.schema)
+    bpr = estimate_bytes_per_row(df.schema, column_length_limit)
     batch_rows = rows_per_batch(opts, bpr)
 
     if (opts.partition_by or opts.cluster_by) and file_mode:
@@ -363,8 +385,11 @@ def write_parquet(df: DataFrame, path: str, opts: SinkOptions | None = None) -> 
     if opts.row_groups_per_file:
         records_per_file = batch_rows * opts.row_groups_per_file
     elif opts.file_size_threshold:
-        # size threshold -> approximate rows via the schema bytes/row estimate,
-        # mirroring how the reference converts its memory cap to rows.
+        # size threshold -> approximate rows via the length-capped schema
+        # bytes/row estimate, mirroring how the reference converts its
+        # memory cap to rows. When the whole result fits one file this
+        # staging pass is the only write; the footer-measured resplit
+        # below is the fallback for estimates that miss.
         records_per_file = max(1, opts.file_size_threshold // bpr)
     else:
         records_per_file = 0  # single file
@@ -395,16 +420,10 @@ def write_parquet(df: DataFrame, path: str, opts: SinkOptions | None = None) -> 
         # expensive) query, so each refinement is an IO-only pass over
         # the result, exactly like the reference re-chunking its own
         # written row groups.
-        import shutil
-
-        import math
-
-        import pyarrow.parquet as _pq
-
         prev_rpf = records_per_file
         spark = df.sparkSession
         for i in range(4):
-            actual_rpf = _resplit_rows(parts, opts.file_size_threshold)
+            actual_rpf, total_rows = _resplit_rows(parts, opts.file_size_threshold)
             if not actual_rpf or actual_rpf == prev_rpf:
                 break
             prev_rpf = actual_rpf
@@ -414,9 +433,6 @@ def write_parquet(df: DataFrame, path: str, opts: SinkOptions | None = None) -> 
             # staged part — coalesce (order-preserving, no shuffle) to a
             # task count sized for ~32 capped files per task so
             # over-split parts can actually merge.
-            total_rows = sum(
-                _pq.ParquetFile(p).metadata.num_rows for p in parts
-            )
             tasks = max(1, math.ceil(total_rows / actual_rpf / 32))
             (
                 spark.read.parquet(staging)
@@ -433,25 +449,26 @@ def write_parquet(df: DataFrame, path: str, opts: SinkOptions | None = None) -> 
     return _finalize_parts(parts, path, opts, staging)
 
 
-def _resplit_rows(parts: list[str], threshold: int) -> int | None:
-    """Rows-per-file recomputed from MEASURED bytes/row, or None if the
-    staged parts already land within [threshold/2, threshold]. Row counts
-    come from the parquet footers — no data is read."""
+def _resplit_rows(parts: list[str], threshold: int) -> tuple[int | None, int]:
+    """(rows-per-file, total rows) of the staged parts. Rows-per-file is
+    recomputed from MEASURED bytes/row, or None if the parts already land
+    within [threshold/2, threshold]. Row counts come from the parquet
+    footers, each read once — no data is read."""
     import pyarrow.parquet as pq
 
     sizes = [os.path.getsize(p) for p in parts]
     total_rows = sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
     if total_rows == 0:
-        return None
+        return None, 0
     biggest = max(sizes)
     under = len(parts) > 1 and biggest < threshold // 2  # over-split
     over = biggest > threshold  # file exceeds the cap
     if not (under or over):
-        return None
+        return None, total_rows
     measured_bpr = max(1, sum(sizes) // total_rows)
     # 0.9 fill: leave headroom for per-file footer/dictionary overhead so
     # the rewrite lands UNDER the cap
-    return max(1, int(threshold * 0.9) // measured_bpr)
+    return max(1, int(threshold * 0.9) // measured_bpr), total_rows
 
 
 def _stale_outputs(path: str) -> list[str]:

@@ -34,11 +34,13 @@ from __future__ import annotations
 import datetime
 import decimal
 from collections.abc import Callable, Sequence
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from odbc2parquet_spark.params import PlaceholderError, quote_identifier, to_positional
+from odbc2parquet_spark.sinks.parquet_sink import audit_output
 
 #: rows per executemany call — the reference's default bulk batch
 #: (src/query/batch_size_limit.rs:6-15).
@@ -144,6 +146,16 @@ def _executemany_partition(
         conn.close()
 
 
+def footer_row_count(df: DataFrame) -> int:
+    """Rows of a parquet read, summed from the footers of exactly
+    ``df.inputFiles()`` — no Spark job. Falls back to ``count()`` when a
+    file is not on the local filesystem (``file:`` URI)."""
+    uris = [urlparse(u) for u in df.inputFiles()]
+    if any(u.scheme != "file" for u in uris):
+        return df.count()
+    return audit_output([unquote(u.path) for u in uris])["n_rows"]
+
+
 def insert_parquet(
     spark: SparkSession,
     parquet_path: str,
@@ -162,8 +174,9 @@ def insert_parquet(
     df = spark.read.parquet(parquet_path)
     validate_insertable_schema(df.schema)
     if jdbc_url is not None:
-        # parquet count() is footer-metadata only — no data scan
-        n = df.count()
+        # Spark's JDBC writer reports no row count; sum the footers of the
+        # files the write will read instead of running a count() job
+        n = footer_row_count(df)
         (
             df.write.format("jdbc")
             .mode("append")

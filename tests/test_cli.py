@@ -316,3 +316,81 @@ def test_cli_batch_size_memory_si_units(spark, sf_dir, tmp_path, capsys):
     assert len(written) > 1
     total = sum(pq.read_table(p).num_rows for p in written)
     assert total == 5
+
+
+def test_cli_column_length_limit_relieves_batch_memory(spark, sf_dir, tmp_path, capsys):
+    """The advice rows_per_batch prints — apply '--column-length-limit' —
+    works: a --batch-size-memory below one 4096-byte string row raises,
+    and the same memory with --column-length-limit 64 succeeds."""
+    import pytest
+
+    flags = ["query", "--tables-dir", sf_dir, "--batch-size-memory", "1KiB"]
+    out = str(tmp_path / "o.par")
+    sql = "SELECT o_orderkey, o_orderstatus FROM orders"
+    with pytest.raises(ValueError, match="--column-length-limit"):
+        main([*flags, out, sql])
+    assert main([*flags, "--column-length-limit", "64", out, sql]) == 0
+    written = json.loads(capsys.readouterr().out)["written"]
+    assert pq.read_table(written[0]).num_rows == spark.sql(sql).count()
+
+
+SPLIT_SQL = (
+    "SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_discount,"
+    " l_returnflag, l_shipdate, o_orderpriority, o_totalprice, o_orderdate"
+    " FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
+    " WHERE l_shipdate BETWEEN ? AND ?"
+)
+
+
+def test_cli_size_split_export_single_pass(spark, sf_dir, tmp_path, capsys, monkeypatch):
+    """A --file-size-threshold export whose length-capped estimate fits
+    one file is one Spark job: the staging pass writes one part, so no
+    resplit rewrite runs and no resplit staging directory appears."""
+    import glob
+
+    import odbc2parquet_spark.engine as engine
+    import odbc2parquet_spark.sinks.parquet_sink as sink
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return store.executionsList().size()
+
+    out = str(tmp_path / "out.par")
+    fired, staged = [], []
+    write_parquet, finalize = engine.write_parquet, sink._finalize_parts
+
+    def counted_write(*args, **kwargs):
+        before = executions()
+        produced = write_parquet(*args, **kwargs)
+        fired.append(executions() - before)
+        return produced
+
+    def finalize_seen(parts, path, opts, staging):
+        staged.append((staging, sorted(glob.glob(out + ".__staging*"))))
+        return finalize(parts, path, opts, staging)
+
+    monkeypatch.setattr(engine, "write_parquet", counted_write)
+    monkeypatch.setattr(sink, "_finalize_parts", finalize_seen)
+    params = ["1995-01-01", "1995-12-31"]
+    rc = main(
+        [
+            "query",
+            "--tables-dir", sf_dir,
+            "--file-size-threshold", "4MiB",
+            "--avoid-decimal",
+            "--column-length-limit", "64",
+            out,
+            SPLIT_SQL,
+            *params,
+        ]
+    )
+    assert rc == 0
+    written = json.loads(capsys.readouterr().out)["written"]
+    assert written == [str(tmp_path / "out_01.par")]
+    assert os.listdir(tmp_path) == ["out_01.par"]
+    assert fired == [1]
+    assert staged == [(out + ".__staging__", [out + ".__staging__"])]
+    rows = pq.ParquetFile(written[0]).metadata.num_rows
+    assert rows == spark.sql(SPLIT_SQL, args=params).count() > 0

@@ -96,6 +96,20 @@ def test_bytes_per_row_estimate():
     assert estimate_bytes_per_row(schema) == 4 + 8 + 4096
 
 
+def test_bytes_per_row_length_limit_caps_strings():
+    schema = T.StructType(
+        [
+            T.StructField("a", T.IntegerType()),
+            T.StructField("s", T.StringType()),
+            T.StructField("b", T.BinaryType()),
+        ]
+    )
+    # the limit caps strings only: apply_mapping_options enforces it on
+    # strings, while binary lengths stay unchecked
+    assert estimate_bytes_per_row(schema, length_limit=64) == 4 + 64 + 4096
+    assert estimate_bytes_per_row(schema) == 4 + 4096 + 4096
+
+
 def test_time_text_to_int(spark):
     from odbc2parquet_spark.functions.timeutil import int_to_time_text, time_text_to_int
 

@@ -12,6 +12,7 @@ from odbc2parquet_spark.params import PlaceholderError
 from odbc2parquet_spark.sinks.writeback import (
     UnsupportedInsertType,
     execute_parquet,
+    footer_row_count,
     generate_insert_statement,
     insert_parquet,
     validate_insertable_schema,
@@ -241,3 +242,23 @@ def test_timestamp_writeback_utc_normalized():
         [sys.executable, "-c", code], capture_output=True, text=True, env=env
     ).stdout.strip()
     assert out == "2024-06-01 12:00:00.000000"
+
+
+def test_footer_row_count_matches_spark_count(spark, tmp_path):
+    """The JDBC insert's row count, summed from the footers of exactly
+    ``inputFiles()``, equals Spark's count() for a single file, a
+    multi-part directory and a hive-partitioned directory (the path has a
+    space, which inputFiles() returns percent-encoded)."""
+    root = tmp_path / "with space"
+    df = spark.range(0, 1000, 1, 4).selectExpr("id", "CAST(id % 3 AS INT) AS g")
+    single = str(root / "single")
+    df.coalesce(1).write.parquet(single)
+    (single_file,) = [str(p) for p in (root / "single").glob("part-*.parquet")]
+    multi = str(root / "multi")
+    df.write.parquet(multi)
+    hive = str(root / "hive")
+    df.write.partitionBy("g").parquet(hive)
+    for p in (single_file, multi, hive):
+        read = spark.read.parquet(p)
+        assert footer_row_count(read) == read.count() == 1000, p
+    assert len(spark.read.parquet(hive).inputFiles()) > 1
