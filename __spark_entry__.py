@@ -125,36 +125,6 @@ _PRIORITY = [
 ]
 
 
-# Driver-coverage debt (round 9): the 22 registered queries the driver's
-# bounded 50-row sample has never scored (all judge-verified green at r8).
-# Hard-pinned to the very front of the scoring order — ahead of family
-# round-robin and of any round-9 additions — until each has a driver row.
-_DEBT_R9 = [
-    "ev_decay_topk",
-    "ev_km_survival",
-    "ev_kmv_quantile",
-    "ev_rfm_segments",
-    "ev_shapley_attribution",
-    "ev_stickiness",
-    "mm_audio_tone",
-    "mm_keyframes",
-    "sim_ivf_pq_res_recall",
-    "sim_ivf_pq_res_topk",
-    "sim_jaccard_links",
-    "sim_knn_classifier",
-    "sim_maxsim_topk",
-    "sim_nprobe_curve",
-    "sim_rrf_fusion",
-    "tx_conformal_interval",
-    "tx_hash_collisions",
-    "tx_naive_bayes",
-    "tx_nb_confusion",
-    "tx_neg_sample_table",
-    "tx_source_overlap",
-    "tx_stupid_backoff",
-]
-
-
 def _family(name: str) -> str:
     """Family prefix: leading letters (q5_... and q_... are both 'q')."""
     head = name.split("_", 1)[0]
@@ -209,8 +179,6 @@ def _interleaved() -> list[str]:
     last, red = _score_history()
 
     def tier(name: str) -> tuple[int, int]:
-        if name in _DEBT_R9 and name not in last:
-            return (-1, _DEBT_R9.index(name))
         if name in red:
             return (0, 0)
         if name not in last:

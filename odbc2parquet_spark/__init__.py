@@ -21,7 +21,8 @@ Layout
 - ``sources``    : parquet / JDBC sources, catalog listing.
 - ``operators``  : large-scale extensions: dedup, similarity search,
                    text analysis, multimodal column plumbing.
-- ``streaming``  : incremental (Structured Streaming) transfer analogue.
+- ``streaming``  : watermarked event-stream operators (windows, sessions,
+                   stream-stream joins, streaming dedup).
 """
 
 __version__ = "0.1.0"

@@ -12,8 +12,9 @@ src/connection.rs:36-88), this engine's sources are either a JDBC URL
 (``--jdbc-url``; Spark reads through the driver with pushdown) or a
 directory of parquet tables registered as views (``--tables-dir`` — Spark
 IS the DBMS). SQL text is taken verbatim, ``?`` params bind positionally
-(src/query.rs:63-66 -> spark.sql args), ``-`` reads the statement from
-stdin (src/query.rs:118-126).
+against ``--tables-dir`` (src/query.rs:63-66 -> spark.sql args; a JDBC
+read cannot bind them, so params with ``--jdbc-url`` are an error), ``-``
+reads the statement from stdin (src/query.rs:118-126).
 """
 
 from __future__ import annotations
@@ -346,6 +347,12 @@ def main(argv: list[str] | None = None) -> int:
 
     if getattr(args, "dsn", None) is not None or getattr(args, "prompt", False):
         _resolve_connection(args)
+    if args.cmd == "query" and args.params and args.jdbc_url and not args.tables_dir:
+        raise SystemExit(
+            "Query parameters are not supported with --jdbc-url or --dsn: "
+            "Spark's JDBC source sends the SQL text as is and cannot bind ?. "
+            "Write the values into the SQL instead."
+        )
 
     from odbc2parquet_spark.session import get_spark
 

@@ -21,9 +21,9 @@ key bit-for-bit):
   Python function in two SQL dialects (Spark ``shiftright``/``shiftleft``
   vs DuckDB ``>>``/``<<``); the arithmetic is identical.
 
-Scale shape: key computation is map-only (no shuffle); the clustering
-itself is one ``repartitionByRange`` on the key + ``sortWithinPartitions``
-— exactly the cost of any global sort, paid once at write time, repaid on
+Scale shape: key computation is map-only (no shuffle); clustering a table
+on the key is one ``repartitionByRange`` + ``sortWithinPartitions`` —
+exactly the cost of any global sort, paid once at write time, repaid on
 every subsequent selective scan. min/max stats per bucket never leave the
 executors (one small groupBy).
 """
@@ -105,25 +105,6 @@ def zorder_key(
         df.crossJoin(F.broadcast(stats))
         .withColumn("zkey", F.expr(z))
         .drop("_mnx", "_mxx", "_mny", "_mxy")
-    )
-
-
-def cluster_by_zorder(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    bits: int = 10,
-    num_partitions: int = 32,
-) -> DataFrame:
-    """Physically cluster: range-partition + sort on the Morton key.
-
-    Writing THIS frame to parquet gives every file/row group a tight
-    min/max rectangle in (x, y) — the layout a 100 TB table wants under
-    two-dimensional predicates.
-    """
-    keyed = zorder_key(df, x_col, y_col, bits)
-    return keyed.repartitionByRange(num_partitions, "zkey").sortWithinPartitions(
-        "zkey"
     )
 
 

@@ -432,35 +432,6 @@ def simhash_near_pairs(sig: DataFrame, max_hamming: int = 6) -> DataFrame:
     )
 
 
-def derived_simhash_bits(
-    n_docs: int,
-    bands: int = 8,
-    target_occupancy: int = 64,
-    min_band_bits: int = 4,
-    max_band_bits: int = 8,
-) -> int:
-    """Occupancy-scaled SimHash signature width for banded pairing.
-
-    In :func:`simhash_banded_pairs` the per-band bucket count is
-    2^(bits/bands) and FIXED by the signature width — the same
-    linear-occupancy / quadratic-pairs failure SCALE.md measured for the
-    random-hyperplane prefix_bits knob. The pigeonhole guarantee forces
-    the bands to partition the signature, so the occupancy rule scales
-    the WIDTH: per-band key bits = ceil(log2(n / target_occupancy))
-    (clamped), and the signature to request from :func:`simhash` is
-    ``bands * band_bits``. Same double-precision formula as
-    similarity.derived_prefix_bits so oracles reproduce it from COUNT(*);
-    max_band_bits=8 keeps the default 8-band signature within the int64
-    the pipeline packs.
-    """
-    from odbc2parquet_spark.operators.similarity import derived_prefix_bits
-
-    band_bits = derived_prefix_bits(
-        n_docs, target_occupancy, min_bits=min_band_bits, max_bits=max_band_bits
-    )
-    return bands * band_bits
-
-
 def simhash_banded_pairs(
     sig: DataFrame,
     max_hamming: int = 6,

@@ -1,23 +1,24 @@
-"""Join strategies for scale: skew salting and bucketed co-location.
+"""Join strategies for scale: skew salting, fuzzy matching and runtime filters.
 
 AQE's skew-join split (on in session.py) handles most skew at runtime by
-splitting oversized partitions; these helpers cover the two cases it can't:
+splitting oversized partitions. These helpers cover what it can't:
 
 - ``salted_join``: one key so hot that even a split partition's *build* side
   explodes (e.g. joining events to a dimension where 40% of rows share one
   key). Salting multiplies the small side by ``salt`` and spreads the big
   side's hot key across ``salt`` reducers — bounded memory per task by
   construction, at the cost of replicating the small side.
-- ``write_bucketed`` / bucketed reads: repeated big-big joins on a stable
-  key (fact-to-fact). Pre-bucketing both sides on the join key turns every
-  subsequent join into a zero-shuffle sort-merge — pay the shuffle once at
-  write time, never again. At 100 TB this is the difference between an
-  hours-long exchange and a local merge.
+- ``skew_profile``: which keys would melt a reducer, and the salt that
+  re-balances each.
+- ``deletion_blocked_fuzzy_match``: entity resolution whose blocks stay
+  bounded however large the table grows.
+- ``bloom_semi_join``: a semi-join that pre-filters the big side with a
+  broadcast Bloom bitset before the exact join's exchange.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -53,38 +54,11 @@ def salted_join(
     return out.drop("__salt")
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    buckets: int = 32,
-    sort: bool = True,
-) -> None:
-    """Persist ``df`` as a bucketed (and bucket-sorted) managed table.
-
-    Both sides of a recurring join bucketed with the SAME (key, buckets)
-    join with no Exchange — Catalyst sees the matching output partitioning
-    and plans a local sort-merge (and skips even the sort when
-    ``sort=True``).
-    """
-    w = df.write.mode("overwrite").bucketBy(buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(table)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str, how: str = "inner"
-) -> DataFrame:
-    """Join two same-bucketed tables — zero-shuffle when bucket specs match."""
-    return spark.table(left_table).join(spark.table(right_table), key, how)
-
-
 def _argmin_match(scored: DataFrame) -> DataFrame:
     """(probe_id, matched_id, distance): per-probe argmin over candidate
-    match rows, shared by both fuzzy-match blockers. The min runs over a
-    PACKED long (distance << 43 | matched_id) — lexicographically equal
-    to the (distance, matched_id) struct-min for non-negative values,
+    match rows. The min runs over a PACKED long (distance << 43 |
+    matched_id) — lexicographically equal to the (distance, matched_id)
+    struct-min for non-negative values,
     but a primitive long min HASH-aggregates with map-side partials
     where a struct-min forces a SortAggregate over the candidate table
     (its quadratic part). raise_error guards pin the packing bounds
@@ -114,65 +88,6 @@ def _argmin_match(scored: DataFrame) -> DataFrame:
             F.shiftright(F.col("best_enc"), 43).cast("integer").alias("distance"),
         )
     )
-
-
-def blocked_fuzzy_match(
-    probes: DataFrame,
-    master: DataFrame,
-    block_col: str,
-    text_col: str,
-    probe_id: str,
-    master_id: str,
-    max_distance: int | None = None,
-    max_block: int | None = None,
-) -> DataFrame:
-    """Entity resolution: match each probe record to the master record
-    with the minimum Levenshtein distance WITHIN its blocking key.
-
-    Returns (probe_id, matched_id, distance). Blocking is the classic ER
-    scale move: the pairwise edit-distance pass runs inside one block
-    (equi-join on ``block_col``), so cost is sum(block^2) not |probe| x
-    |master|; at 100 TB the block key is also the shuffle key, and
-    ``max_block`` caps a skewed block the same way the LSH bucket caps
-    work — master rows in an over-cap block are dropped (a window count
-    before the join), trading those probes' matches for boundedness,
-    exactly the recall/boundedness trade the LSH paths make. The
-    argmin is a groupBy min over a PACKED long (distance << 43 |
-    matched_id) — lexicographically identical to the (distance, id)
-    struct-min it replaces for non-negative values (guards enforce the
-    packing bounds), but a primitive min HASH-aggregates where a
-    struct-min can only SortAggregate (sorting the candidate table, the
-    quadratic part of this operator). Map-side partials mean the
-    per-probe exchange carries one row per probe, never the
-    probe x block_master candidate volume;
-    ``max_distance`` optionally drops non-matches first so a probe with
-    no plausible candidate emits nothing.
-    """
-    from pyspark.sql import Window as W
-
-    p = probes.select(
-        F.col(probe_id).alias("probe_id"),
-        F.col(block_col).alias("blk"),
-        F.col(text_col).alias("ptext"),
-    )
-    m = master.select(
-        F.col(master_id).alias("matched_id"),
-        F.col(block_col).alias("blk"),
-        F.col(text_col).alias("mtext"),
-    )
-    if max_block is not None:
-        wb = W.partitionBy("blk")
-        m = (
-            m.withColumn("block_n", F.count("*").over(wb))
-            .filter(F.col("block_n") <= max_block)
-            .drop("block_n")
-        )
-    scored = p.join(m, "blk").withColumn(
-        "distance", F.levenshtein(F.col("ptext"), F.col("mtext"))
-    )
-    if max_distance is not None:
-        scored = scored.filter(F.col("distance") <= max_distance)
-    return _argmin_match(scored)
 
 
 def deletion_blocked_fuzzy_match(

@@ -8,8 +8,8 @@ function of the ROW, independent of partitioning, cluster size, or
 execution order, and reproducible by any engine (the DuckDB oracle
 recomputes the identical sample).
 
-Both operators are narrow (zero shuffles): a filter over a hash
-expression, whole-stage codegen'd.
+``stratified_sample`` and ``ab_assign`` are narrow (zero shuffles): a
+hash expression, whole-stage codegen'd.
 """
 
 from __future__ import annotations
@@ -22,12 +22,6 @@ _HASH_DOMAIN = 1 << 60
 
 def _hash60(col: F.Column) -> F.Column:
     return F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10).cast("long")
-
-
-def hash_sample(df: DataFrame, key_col: str, fraction: float) -> DataFrame:
-    """Keep ~``fraction`` of rows, chosen by key hash — deterministic,
-    partitioning-independent, and stable across runs and engines."""
-    return df.filter(_hash60(F.col(key_col)) < F.lit(int(fraction * _HASH_DOMAIN)))
 
 
 def stratified_sample(
@@ -232,8 +226,8 @@ def reservoir_sample(
     P(selected) proportional to weight, exactly the distributed
     equivalent of the classic streaming reservoir.
 
-    Deterministic for the same reason as :func:`hash_sample` (u is a
-    pure row function), so the SAMPLE ITSELF is reproducible across
+    Deterministic for the same reason as the hash-threshold samplers (u
+    is a pure row function), so the SAMPLE ITSELF is reproducible across
     runs, partitionings, and engines — the lineage property training
     pipelines need. Rows with weight <= 0 are excluded (a zero-weight
     row can never be drawn; a negative weight is a data error).

@@ -592,29 +592,6 @@ def ivf_probe_cells(
 # ---------------------------------------------------------- storage ops
 
 
-def normalize_vectors(
-    vectors: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """(vec_id, unit): L2-normalized vectors — after this, cosine becomes a
-    plain dot product (saves a sqrt + two folds per pair downstream).
-    Zero vectors pass through unchanged. Narrow, no shuffle.
-
-    The norm is materialized as its own column FIRST: a higher-order
-    transform re-evaluates its whole bound expression per element (no
-    subexpression caching), so embedding the O(d) norm fold in the
-    lambda would cost O(d²) per row."""
-    staged = vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("_v_"),
-        F.sqrt(norm_sq(F.col(vec_col))).alias("_n_"),
-    )
-    n = F.col("_n_")
-    unit = F.when(n == 0, F.col("_v_")).otherwise(
-        F.transform(F.col("_v_"), lambda x: (x.cast("double") / n).cast("float"))
-    )
-    return staged.select("vec_id", unit.alias("unit"))
-
-
 def quantize_int8(
     vectors: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:

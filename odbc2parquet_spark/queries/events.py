@@ -2004,8 +2004,7 @@ def ev_kmv_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV-sample median per event type, WITH its own error certificate:
     the 63 rows with the smallest md5(event_id) hashes are a uniform
     without-replacement sample (the KMV/bottom-k sketch — mergeable,
-    bounded state, the batch dual of streaming/monitors.
-    streaming_kmv_quantile), and the lower median of the sample is the
+    bounded state), and the lower median of the sample is the
     streaming-feasible quantile estimate; the exact lower median is
     computed alongside so every row carries its measured |error|.
     Deterministic: hash selection is a pure row function, both medians

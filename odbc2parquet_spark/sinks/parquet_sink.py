@@ -40,7 +40,6 @@ import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from odbc2parquet_spark.mappings import estimate_bytes_per_row
 
@@ -617,78 +616,6 @@ def _write_with_encodings(
 
     files = df.mapInArrow(write_partition, "file string").collect()
     return sorted(r.file for r in files)
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: tuple[str, str],
-    num_files: int = 16,
-    bits: int = 16,
-) -> None:
-    """Write ``df`` laid out in Z-order on two keys: range-partition +
-    sort by the Morton value, one file per partition, stats-disjoint in
-    both dimensions. At 100 TB this is the layout pass that makes
-    two-predicate scans footer-prunable.
-
-    Key computation delegates to operators/clustering.zorder_key — the
-    exact-integer-arithmetic implementation the q_zorder_cluster oracle
-    pins (this sink had its own double-scaled variant before round 4;
-    one Morton definition now serves layout, stats audit and oracle).
-    Like zorder_key, ``cols`` should be integer-domain; pre-scale
-    fractional float keys (multiply + floor) so the 2^bits cell grid has
-    resolution to cluster on — see zorder_key's docstring.
-    """
-    from odbc2parquet_spark.operators.clustering import zorder_key
-
-    zdf = zorder_key(df, cols[0], cols[1], bits)
-    (
-        zdf.repartitionByRange(num_files, F.col("zkey"))
-        .sortWithinPartitions("zkey")
-        .drop("zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    target_file_bytes: int = 512 * 1024 * 1024,
-) -> tuple[int, int]:
-    """Small-file compaction: rewrite a parquet directory into
-    ceil(total_bytes / target) files. Returns (files_before, files_after).
-
-    The maintenance pass every long-lived ingest needs — streaming and
-    per-batch writes accumulate small files until scan planning (footer
-    reads, task scheduling) dominates query time. Coalesce (no shuffle)
-    into a staging directory, then an atomic-enough swap: the old layout
-    is moved aside before staging is renamed in, and removed only after.
-    At 100 TB run this per partition directory, not on the whole table.
-    """
-    staging = path.rstrip("/") + "_compact_staging"
-    backup = path.rstrip("/") + "_compact_old"
-    # recover from a crashed prior run: if the table dir is gone but the
-    # backup survived, restore it; stale staging/backup dirs are removed
-    # so they can never collide with this run's renames
-    if not os.path.isdir(path) and os.path.isdir(backup):
-        os.rename(backup, path)
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(backup, ignore_errors=True)
-    before = [f for f in glob.glob(os.path.join(path, "*.parquet"))]
-    total = sum(os.path.getsize(f) for f in before)
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    (
-        spark.read.parquet(path)
-        .coalesce(n_files)
-        .write.mode("overwrite")
-        .parquet(staging)
-    )
-    os.rename(path, backup)
-    os.rename(staging, path)
-    shutil.rmtree(backup)
-    after = glob.glob(os.path.join(path, "*.parquet"))
-    return (len(before), len(after))
 
 
 def audit_output(paths: list[str]) -> dict:

@@ -1,1 +1,1 @@
-"""Structured Streaming: incremental transfer + stateful event analytics."""
+"""Watermarked event-stream operators, run in batch by the query registry."""

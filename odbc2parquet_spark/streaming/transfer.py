@@ -1,49 +1,18 @@
-"""Streaming analogues of the transfer pipeline.
+"""Watermarked event-stream operators.
 
-The reference is strictly batch, but its execution model — fetch a batch,
-write a row group, repeat, bounded memory (reference
-src/query/conversion_strategy.rs:123-137, README.md:8 "only holds one batch
-at a time") — is exactly a Structured Streaming micro-batch pipeline. These
-operators are the scale-out generalization: new files land in a source
-directory, get transformed and appended to the sink incrementally with
-exactly-once file-sink semantics (Spark's commit-log equivalent of the
-reference's tempfile-until-finalized CurrentFile, current_file.rs:14-80).
+All but ``late_event_audit`` work on a streaming or a batch DataFrame
+alike: the watermark and window arguments bound the state a stream
+keeps, and a batch frame ignores the watermark. The registry runs them
+in batch over ``events`` and ``documents`` (queries/events.py,
+queries/dedup.py), checked against a DuckDB oracle. ``late_event_audit``
+replays a recorded log to show which events a given watermark delay
+would drop.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-def stream_transfer(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    out_path: str,
-    checkpoint: str,
-    transform=None,
-    trigger_available_now: bool = True,
-):
-    """Incremental parquet -> parquet transfer (micro-batched).
-
-    ``availableNow`` processes the current backlog then stops — the batch
-    CLI semantics — while the same query with a processing-time trigger is
-    the continuous-ingest deployment. Returns the StreamingQuery.
-    """
-    src = spark.readStream.schema(schema).parquet(source_dir)
-    if transform is not None:
-        src = transform(src)
-    writer = (
-        src.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def windowed_event_counts(events: DataFrame, window: str = "5 minutes", watermark: str = "10 minutes") -> DataFrame:
@@ -212,111 +181,4 @@ def late_event_audit(
             F.sum("_late_").cast("long").alias("n_late"),
         )
         .orderBy("event_type")
-    )
-
-
-def streaming_upsert(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    key_col: str,
-    seq_col: str,
-):
-    """CDC sink: stream change records and maintain a latest-wins snapshot
-    table via foreachBatch — the streaming twin of the batch
-    ``q_upsert_latest`` compaction.
-
-    Each micro-batch unions the incoming changes with the current
-    snapshot and keeps the max-``seq_col`` row per key (rewriting the
-    snapshot — at 100 TB swap the rewrite for a MERGE into a table
-    format; the per-batch dedup logic is identical). availableNow drains
-    the backlog and stops, matching the batch-CLI semantics; the
-    checkpoint makes redelivery idempotent — replaying a batch cannot
-    regress the snapshot because latest-wins is associative/idempotent,
-    and the snapshot swap keeps the previous version aside until the new
-    one is in place (a crash mid-swap is recovered on the next batch).
-    """
-    import os as _os
-    import shutil as _sh
-
-    backup = state_dir.rstrip("/") + "_backup"
-
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
-        # crash recovery: a previous run renamed the snapshot aside but
-        # died before swapping staging in — restore it rather than
-        # silently treating the replayed batch as the whole history
-        if not _os.path.exists(state_dir) and _os.path.exists(backup):
-            _os.rename(backup, state_dir)
-        if _os.path.exists(state_dir):
-            current = sess.read.parquet(state_dir)
-            unioned = batch.select(*[f.name for f in schema]).unionByName(current)
-        else:
-            unioned = batch.select(*[f.name for f in schema])
-        w = Window.partitionBy(key_col).orderBy(F.desc(seq_col))
-        latest = (
-            unioned.withColumn("_rn_", F.row_number().over(w))
-            .filter(F.col("_rn_") == 1)
-            .drop("_rn_")
-        )
-        staging = state_dir.rstrip("/") + f"_staging_{batch_id}"
-        _sh.rmtree(staging, ignore_errors=True)
-        latest.write.mode("overwrite").parquet(staging)
-        # swap: old snapshot moves ASIDE (recoverable), staging moves in,
-        # then the backup is dropped — no window where the data is gone
-        _sh.rmtree(backup, ignore_errors=True)
-        if _os.path.exists(state_dir):
-            _os.rename(state_dir, backup)
-        _os.rename(staging, state_dir)
-        _sh.rmtree(backup, ignore_errors=True)
-
-    return (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def streaming_fingerprint_votes(
-    probe_landmarks: DataFrame, index: DataFrame
-) -> DataFrame:
-    """STREAM-STATIC constellation matching: a stream of probe landmarks
-    (doc_id, fi, l — e.g. live audio/video snippets fingerprinted at the
-    edge) joins the STATIC landmark index (the catalog built by
-    operators/multimodal.audio_landmarks and capped like
-    audio_fingerprint_match) and accumulates identification votes per
-    (probe, candidate, time offset).
-
-    The join is Structured Streaming's stream-static shape: the static
-    side broadcasts (it is index-sized, not corpus-sized) and each
-    micro-batch of probe landmarks maps through it without any stateful
-    shuffle; only the vote aggregation keeps state, keyed on the
-    (probe, candidate, offset) triple — exactly the running-count state
-    a streaming groupBy maintains. Update/complete output surfaces the
-    current vote totals; the batch dual (one groupBy over the same
-    join) is pytest-pinned equal after an availableNow drain.
-    """
-    probes = probe_landmarks.select(
-        F.col("doc_id").alias("probe_doc"),
-        F.col("fi").alias("pfi"),
-        "l",
-    )
-    idx = index.select(
-        F.col("doc_id").alias("matched_doc"),
-        F.col("fi").alias("cfi"),
-        "l",
-    )
-    return (
-        probes.join(F.broadcast(idx), "l")
-        .groupBy(
-            "probe_doc",
-            "matched_doc",
-            (F.col("cfi") - F.col("pfi")).alias("offset"),
-        )
-        .agg(F.count(F.lit(1)).alias("votes"))
     )

@@ -233,6 +233,18 @@ def test_cli_dsn_conflicts_with_jdbc_url(tmp_path):
         )
 
 
+def test_cli_jdbc_url_rejects_params():
+    """Spark's JDBC source cannot bind ?: params given with --jdbc-url fail
+    before any read instead of reaching the database unbound."""
+    import pytest
+
+    with pytest.raises(SystemExit, match="not supported with --jdbc-url"):
+        main(
+            ["query", "--jdbc-url", "jdbc:derby:memory:never", "out.par",
+             'SELECT * FROM t WHERE "a" > ?', "5"]
+        )
+
+
 def test_cli_dsn_unknown_is_actionable(tmp_path, monkeypatch):
     """An unresolvable DSN errors with the file consulted, the aliases
     it defines, and how to register the missing one."""

@@ -275,59 +275,6 @@ def test_cluster_by_disjoint_file_stats(spark, sf_dir, tmp_path):
         assert lo_next > hi_prev  # disjoint -> stats-based file skipping works
 
 
-def test_zorder_layout_narrows_both_dimensions(spark, tmp_path):
-    """Z-order contract: per-file min/max ranges are narrow in BOTH keys
-    (a single-key range cluster leaves the second dimension full-width in
-    every file, so two-predicate skipping can't prune)."""
-    import glob as _glob
-
-    import pyarrow.parquet as _pq
-    from pyspark.sql import functions as F
-
-    from odbc2parquet_spark.sinks.parquet_sink import write_zordered
-
-    n = 1 << 14
-    df = spark.range(n).select(
-        (F.col("id") % 128).alias("x"),
-        (F.floor(F.col("id") / 128)).alias("y"),
-    )
-    out = str(tmp_path / "z")
-    write_zordered(df, out, ("x", "y"), num_files=16)
-
-    def avg_span(col_idx):
-        spans = []
-        for f in _glob.glob(out + "/*.parquet"):
-            md = _pq.ParquetFile(f).metadata
-            lo = min(md.row_group(i).column(col_idx).statistics.min for i in range(md.num_row_groups))
-            hi = max(md.row_group(i).column(col_idx).statistics.max for i in range(md.num_row_groups))
-            spans.append(hi - lo)
-        return sum(spans) / len(spans)
-
-    # global span of each dim is 127; z-ordered files must average well
-    # under half of it in BOTH dims simultaneously
-    assert avg_span(0) < 64, f"x span {avg_span(0)}"
-    assert avg_span(1) < 64, f"y span {avg_span(1)}"
-    # and the data survives intact
-    assert spark.read.parquet(out).count() == n
-
-
-def test_compact_parquet_reduces_file_count(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from odbc2parquet_spark.sinks.parquet_sink import compact_parquet
-
-    out = str(tmp_path / "frag")
-    # simulate a fragmented ingest: 32 tiny files
-    spark.range(50_000).select("id", (F.col("id") % 7).alias("v")).repartition(
-        32
-    ).write.parquet(out)
-    before, after = compact_parquet(spark, out, target_file_bytes=64 * 1024 * 1024)
-    assert before == 32 and after <= 2
-    df = spark.read.parquet(out)
-    assert df.count() == 50_000
-    assert df.agg({"v": "sum"}).collect()[0][0] == sum(i % 7 for i in range(50_000))
-
-
 def test_schema_evolution_merge(spark, tmp_path):
     """Batches written with evolving schemas read back as one unified
     relation (mergeSchema) — the additive-column evolution every
@@ -349,23 +296,6 @@ def test_schema_evolution_merge(spark, tmp_path):
     assert rows[5]["quality"] is None      # old rows: new column null-filled
     assert rows[15]["quality"] == 0.5
     assert df.count() == 20
-
-
-def test_compact_parquet_recovers_from_crashed_swap(spark, tmp_path):
-    """A run that died between the two swap renames leaves only the
-    backup directory; the next invocation must restore it and proceed."""
-    import os
-
-    from odbc2parquet_spark.sinks.parquet_sink import compact_parquet
-
-    out = str(tmp_path / "tbl")
-    spark.range(1000).repartition(8).write.parquet(out)
-    # simulate the crash window: table renamed aside, staging never landed
-    os.rename(out, out + "_compact_old")
-    before, after = compact_parquet(spark, out, target_file_bytes=1 << 30)
-    assert before == 8 and after == 1
-    assert spark.read.parquet(out).count() == 1000
-    assert not os.path.exists(out + "_compact_old")
 
 
 def test_compression_level_changes_bytes_spark_path(spark, tmp_path):

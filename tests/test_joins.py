@@ -1,15 +1,9 @@
-"""Scale join strategies: salting correctness + bucketed zero-shuffle."""
+"""Scale join strategies: salting, as-of, range and fuzzy joins."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from odbc2parquet_spark.operators.joins import bucketed_join, salted_join, write_bucketed
-
-
-def _explain(df) -> str:
-    return df._jdf.queryExecution().explainString(
-        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+from odbc2parquet_spark.operators.joins import salted_join
 
 
 def test_salted_join_equals_plain_join(spark):
@@ -43,25 +37,6 @@ def test_salted_join_rejects_unsupported_how(spark):
         salted_join(df, df, "k", how="full")
 
 
-def test_bucketed_join_has_no_exchange(spark):
-    left = spark.range(0, 5000).select(F.col("id").alias("k"), (F.col("id") * 3).alias("a"))
-    right = spark.range(0, 5000).select(F.col("id").alias("k"), (F.col("id") * 5).alias("b"))
-    write_bucketed(left, "t_bleft", "k", buckets=8)
-    write_bucketed(right, "t_bright", "k", buckets=8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, "t_bleft", "t_bright", "k")
-        plan = _explain(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # co-located: no shuffle either side
-        assert joined.count() == 5000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_bleft")
-        spark.sql("DROP TABLE IF EXISTS t_bright")
-
-
 def test_asof_join_semantics(spark):
     from odbc2parquet_spark.operators.asof import asof_join
 
@@ -93,48 +68,6 @@ def test_range_join_edges(spark):
     left = range_join(pts.union(spark.createDataFrame([(5, 99.0)], ["pid", "v"])),
                       iv, "v", "lo", "hi", 10.0, how="left")
     assert left.filter("pid = 5").first().iid is None
-
-
-def test_blocked_fuzzy_match_argmin_and_cutoff(spark):
-    from odbc2parquet_spark.operators.joins import blocked_fuzzy_match
-
-    master = spark.createDataFrame(
-        [(1, "A", "alpha"), (2, "A", "alpine"), (3, "B", "beta")],
-        ["id", "blk", "name"],
-    )
-    probes = spark.createDataFrame(
-        [(10, "A", "alphq"), (11, "B", "zzzzzz")], ["id", "blk", "name"]
-    )
-    got = {
-        r.probe_id: (r.matched_id, r.distance)
-        for r in blocked_fuzzy_match(
-            probes, master, "blk", "name", "id", "id"
-        ).collect()
-    }
-    assert got[10] == (1, 1)      # alphq->alpha dist 1 beats alpine dist 3
-    assert got[11][0] == 3        # only candidate in block B
-    capped = blocked_fuzzy_match(
-        probes, master, "blk", "name", "id", "id", max_distance=2
-    ).collect()
-    assert {r.probe_id for r in capped} == {10}  # zzzzzz has no match <= 2
-
-
-def test_blocked_fuzzy_match_block_cap(spark):
-    from odbc2parquet_spark.operators.joins import blocked_fuzzy_match
-
-    # block A holds 3 master rows (hot), block B holds 1; cap at 2 drops
-    # every candidate in A so its probe emits nothing, B still matches
-    master = spark.createDataFrame(
-        [(1, "A", "aaa"), (2, "A", "aab"), (3, "A", "abb"), (4, "B", "bbb")],
-        ["id", "blk", "name"],
-    )
-    probes = spark.createDataFrame(
-        [(10, "A", "aaa"), (11, "B", "bbc")], ["id", "blk", "name"]
-    )
-    capped = blocked_fuzzy_match(
-        probes, master, "blk", "name", "id", "id", max_block=2
-    ).collect()
-    assert {(r.probe_id, r.matched_id) for r in capped} == {(11, 4)}
 
 
 def test_deletion_blocked_fuzzy_match_single_typo(spark):

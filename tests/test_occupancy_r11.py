@@ -1,5 +1,5 @@
-"""Round-11 tests: occupancy-scaled LSH bucketing (derived_prefix_bits /
-derived_simhash_bits) and the cross-LM empty-vocabulary guard."""
+"""Round-11 tests: occupancy-scaled LSH bucketing (derived_prefix_bits)
+and the cross-LM empty-vocabulary guard."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -29,16 +29,6 @@ def test_derived_prefix_bits_pins_the_measured_rule():
         bits = derived_prefix_bits(n)
         assert bits >= prev
         prev = bits
-
-
-def test_derived_simhash_bits_scales_signature_width():
-    from odbc2parquet_spark.operators.dedup import derived_simhash_bits
-
-    # per-band key width follows the same rule, signature = bands * width
-    assert derived_simhash_bits(2_000, bands=8) == 8 * 5
-    # capped at 8 band bits so the default 8-band signature stays int64
-    assert derived_simhash_bits(200_000, bands=8) == 8 * 8
-    assert derived_simhash_bits(0, bands=4) == 4 * 4
 
 
 def test_lsh_bucket_pairs_occupancy_path_matches_explicit(spark):

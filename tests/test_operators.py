@@ -390,19 +390,6 @@ def test_bigram_surprisal_separates_gibberish(spark):
     assert out[99] > out[0]  # rare bigrams -> higher surprisal
 
 
-def test_hash_sample_deterministic_and_partition_independent(spark):
-    from odbc2parquet_spark.operators.sampling import hash_sample
-
-    df = spark.range(0, 10000).selectExpr("id as k")
-    s1 = {r.k for r in hash_sample(df, "k", 0.3).collect()}
-    s2 = {r.k for r in hash_sample(df.repartition(17), "k", 0.3).collect()}
-    assert s1 == s2  # same rows regardless of partitioning
-    assert 0.25 < len(s1) / 10000 < 0.35
-    # nested property: a smaller fraction selects a SUBSET (same hash order)
-    s_small = {r.k for r in hash_sample(df, "k", 0.1).collect()}
-    assert s_small <= s1
-
-
 def test_mixture_sample_hits_target_proportions(spark):
     from odbc2parquet_spark.operators.sampling import mixture_sample
 
@@ -428,17 +415,10 @@ def test_incremental_exact_dedup(spark):
     assert out == {11, 13}
 
 
-def test_normalize_and_quantize(spark):
-    import math
-
+def test_quantize_int8(spark):
     vecs = spark.createDataFrame(
         [(1, [3.0, 4.0]), (2, [0.0, 0.0]), (3, [-1.0, 1.0])], ["vec_id", "embedding"]
     )
-    unit = {r.vec_id: r.unit for r in S.normalize_vectors(vecs).collect()}
-    assert unit[1] == pytest.approx([0.6, 0.8], abs=1e-6)
-    assert unit[2] == [0.0, 0.0]  # zero vector passes through
-    assert math.hypot(*unit[3]) == pytest.approx(1.0, abs=1e-6)
-
     q = {r.vec_id: r for r in S.quantize_int8(vecs).collect()}
     assert q[1].q == [95, 127]  # 3/ (4/127) = 95.25 -> floor(+.5)=95
     assert q[2].q == [0, 0] and q[2].scale == 0.0
@@ -1380,37 +1360,6 @@ def test_zorder_key_interleaves_bits(spark):
     pts = spark.createDataFrame([(0, 0), (1, 0), (0, 1), (1, 1)], ["x", "y"])
     got = {(r.x, r.y): r.zkey for r in zorder_key(pts, "x", "y", bits=1).collect()}
     assert got == {(0, 0): 0, (1, 0): 1, (0, 1): 2, (1, 1): 3}
-
-
-def test_zorder_layout_prunes_more_files_than_single_dim_sort(spark, tmp_path):
-    """Write the same grid (a) z-clustered and (b) x-sorted; under a narrow
-    y predicate the z layout must leave fewer files whose [y_min, y_max]
-    overlaps the predicate — the actual data-skipping payoff."""
-    import glob
-    import pyarrow.parquet as pq
-    from odbc2parquet_spark.operators.clustering import cluster_by_zorder
-
-    pts = spark.createDataFrame(
-        [(x, y) for x in range(64) for y in range(64)], ["x", "y"]
-    )
-    zdir, xdir = str(tmp_path / "z"), str(tmp_path / "x")
-    cluster_by_zorder(pts, "x", "y", bits=6, num_partitions=16).write.parquet(zdir)
-    pts.repartitionByRange(16, "x").sortWithinPartitions("x").write.parquet(xdir)
-
-    def overlapping(d, lo, hi):
-        n = 0
-        for f in glob.glob(d + "/part-*.parquet"):
-            t = pq.read_table(f, columns=["y"])
-            if t.num_rows == 0:
-                continue
-            ys = t.column("y").to_pylist()
-            if min(ys) <= hi and max(ys) >= lo:
-                n += 1
-        return n
-
-    z_hit = overlapping(zdir, 10, 13)
-    x_hit = overlapping(xdir, 10, 13)
-    assert z_hit < x_hit, (z_hit, x_hit)
 
 
 def test_skew_profile_flags_hot_key_and_salt(spark):

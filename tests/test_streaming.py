@@ -1,33 +1,15 @@
-"""Structured Streaming transfer + watermarked aggregation."""
+"""Watermarked event-stream operators."""
 
 import pytest
-import shutil
 
-from odbc2parquet_spark.catalog import load_table, table_path
+from odbc2parquet_spark.catalog import load_table
 from odbc2parquet_spark.streaming.transfer import (
     sessionized_counts,
-    stream_transfer,
     windowed_event_counts,
 )
 
 
 pytestmark = pytest.mark.slow  # excluded from the default profile (pytest.ini)
-
-
-def test_stream_transfer_available_now(spark, sf_dir, tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    shutil.copy(table_path(sf_dir, "orders"), src / "part-0.parquet")
-    schema = spark.read.parquet(str(src)).schema
-    out = str(tmp_path / "out")
-    q = stream_transfer(
-        spark, str(src), schema, out, str(tmp_path / "ckpt"),
-        transform=lambda df: df.filter("o_totalprice > 100000"),
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(out).count()
-    want = spark.read.parquet(str(src)).filter("o_totalprice > 100000").count()
-    assert got == want
 
 
 def test_windowed_event_counts_batch_semantics(spark, sf_dir):
@@ -45,55 +27,6 @@ def test_sessionized_counts(spark, sf_dir):
     rows = out.collect()
     assert sum(r.n_events for r in rows) == ev.count()
     assert all(r.session_end > r.session_start for r in rows)
-
-
-def test_running_user_totals_state_across_batches(spark, tmp_path):
-    """applyInPandasWithState: state must persist across availableNow runs
-    (the checkpointed state store survives query restarts)."""
-    import pyspark.sql.functions as F
-    from pyspark.sql import types as T
-
-    from odbc2parquet_spark.streaming.stateful import running_user_totals
-
-    src = tmp_path / "src"
-    out = tmp_path / "out"
-    ckpt = str(tmp_path / "ckpt")
-    src.mkdir()
-    schema = T.StructType(
-        [T.StructField("user_id", T.LongType()), T.StructField("value", T.DoubleType())]
-    )
-
-    def run_batch(rows, subdir):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(src / subdir)
-        )
-        stream = spark.readStream.schema(schema).option(
-            "recursiveFileLookup", "true"
-        ).parquet(str(src))
-        q = (
-            running_user_totals(stream)
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_batch([(1, 10.0), (1, 5.0), (2, 1.0)], "b1")
-    run_batch([(1, 2.0), (3, 7.0)], "b2")
-
-    res = spark.read.parquet(str(out))
-    latest = (
-        res.groupBy("user_id")
-        .agg(F.max("n_events").alias("n"), F.max("total_value").alias("tot"))
-        .collect()
-    )
-    got = {r.user_id: (r.n, r.tot) for r in latest}
-    assert got[1] == (3, 17.0)  # 2 events batch1 + 1 in batch2, state carried
-    assert got[2] == (1, 1.0)
-    assert got[3] == (1, 7.0)
 
 
 def test_stream_stream_interval_join(spark, tmp_path):
@@ -211,542 +144,3 @@ def test_late_event_audit_flags_out_of_order(spark):
     got = {r["event_type"]: r for r in late_event_audit(df, delay_seconds=60).collect()}
     assert (got["a"]["n_events"], got["a"]["n_late"]) == (4, 1)
     assert (got["b"]["n_events"], got["b"]["n_late"]) == (3, 1)
-
-
-def test_streaming_upsert_latest_wins(spark, tmp_path):
-    from odbc2parquet_spark.streaming.transfer import streaming_upsert
-
-    src = tmp_path / "changes"
-    src.mkdir()
-    rows1 = [(1, "a", 10), (2, "b", 11), (3, "c", 12)]
-    rows2 = [(2, "B2", 20), (4, "d", 21)]  # update key 2, insert key 4
-    df1 = spark.createDataFrame(rows1, ["k", "v", "seq"])
-    df2 = spark.createDataFrame(rows2, ["k", "v", "seq"])
-    df1.coalesce(1).write.mode("append").parquet(str(src))
-    df2.coalesce(1).write.mode("append").parquet(str(src))
-    state = str(tmp_path / "state")
-    q = streaming_upsert(
-        spark, str(src), df1.schema, state, str(tmp_path / "ckpt"), "k", "seq"
-    )
-    q.awaitTermination(120)
-    got = {r["k"]: (r["v"], r["seq"]) for r in spark.read.parquet(state).collect()}
-    assert got == {1: ("a", 10), 2: ("B2", 20), 3: ("c", 12), 4: ("d", 21)}
-
-
-def test_streaming_upsert_recovers_snapshot_from_backup(spark, tmp_path):
-    """If a prior batch died after moving the snapshot aside, the next
-    batch restores it — replay cannot silently drop history."""
-    import os
-
-    from odbc2parquet_spark.streaming.transfer import streaming_upsert
-
-    state = str(tmp_path / "state")
-    df0 = spark.createDataFrame([(1, "old", 1), (9, "keep", 1)], ["k", "v", "seq"])
-    df0.write.parquet(state)
-    os.rename(state, state + "_backup")  # crash window: snapshot aside
-
-    src = tmp_path / "changes"
-    src.mkdir()
-    spark.createDataFrame([(1, "new", 5)], ["k", "v", "seq"]).coalesce(
-        1
-    ).write.mode("append").parquet(str(src))
-    q = streaming_upsert(
-        spark, str(src), df0.schema, state, str(tmp_path / "ckpt"), "k", "seq"
-    )
-    q.awaitTermination(120)
-    got = {r["k"]: (r["v"], r["seq"]) for r in spark.read.parquet(state).collect()}
-    # key 9 survived the crash via backup restore; key 1 took the update
-    assert got == {1: ("new", 5), 9: ("keep", 1)}
-
-
-def test_decayed_user_rate_state_across_batches(spark, tmp_path):
-    """Recursive EWMA state (alpha=1/2) must carry across availableNow
-    micro-batches: user 1 sees 8, 4 in batch 1 (ewma 6.0) then 10 in
-    batch 2 -> 0.5*10 + 0.5*6 = 8.0."""
-    import pyspark.sql.functions as F
-    from pyspark.sql import types as T
-
-    from odbc2parquet_spark.streaming.stateful import decayed_user_rate
-
-    src = tmp_path / "src"
-    out = tmp_path / "out"
-    ckpt = str(tmp_path / "ckpt")
-    src.mkdir()
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-
-    def run_batch(rows, subdir):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(src / subdir)
-        )
-        stream = spark.readStream.schema(schema).option(
-            "recursiveFileLookup", "true"
-        ).parquet(str(src))
-        q = (
-            decayed_user_rate(stream)
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_batch([(1, 1, 8.0), (1, 2, 4.0), (2, 1, 3.0)], "b1")
-    run_batch([(1, 3, 10.0)], "b2")
-
-    res = spark.read.parquet(str(out))
-    final = {
-        r.user_id: (r.n_events, r.ewma)
-        for r in res.groupBy("user_id")
-        .agg(F.max(F.struct("n_events", "ewma")).alias("s"))
-        .select("user_id", "s.n_events", "s.ewma")
-        .collect()
-    }
-    assert final[1] == (3, 8.0)   # (8 -> 6 -> 8): order by ts, state carried
-    assert final[2] == (1, 3.0)
-
-
-def test_streaming_psi_state_across_batches(spark, tmp_path):
-    """streaming_psi: bin counts persist across availableNow runs; PSI
-    rises once the observed distribution leaves the reference."""
-    from pyspark.sql import types as T
-
-    from odbc2parquet_spark.streaming.monitors import streaming_psi
-
-    src = tmp_path / "src"
-    out = tmp_path / "out"
-    ckpt = str(tmp_path / "ckpt")
-    src.mkdir()
-    schema = T.StructType(
-        [
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    edges = [0.5]          # two bins: <=0.5 and >0.5
-    ref = [0.5, 0.5]       # reference is 50/50
-
-    def run_batch(rows, subdir):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(src / subdir)
-        )
-        stream = spark.readStream.schema(schema).option(
-            "recursiveFileLookup", "true"
-        ).parquet(str(src))
-        q = (
-            streaming_psi(stream, edges, ref)
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    # batch 1 matches the reference: 2 low + 2 high -> psi ~ 0
-    run_batch([("a", 0.1), ("a", 0.2), ("a", 0.9), ("a", 0.8)], "b1")
-    # batch 2 is all-high: cumulative 2 low / 6 high -> psi > 0
-    run_batch([("a", 0.9)] * 4, "b2")
-
-    import pyspark.sql.functions as F
-
-    res = spark.read.parquet(str(out))
-    rows = {r.n_total: r.psi for r in res.filter(F.col("key") == "a").collect()}
-    assert rows[4] == 0.0          # post-batch-1 snapshot: on-reference
-    assert rows[8] > 0.1           # post-batch-2: counts carried, drifted
-    # exact check: p = (0.25, 0.75) vs (0.5, 0.5)
-    import math
-
-    expect = (0.25 - 0.5) * math.log(0.25 / 0.5) + (0.75 - 0.5) * math.log(
-        0.75 / 0.5
-    )
-    assert rows[8] == pytest.approx(expect, abs=1e-6)
-
-
-def test_streaming_cusum_latches_alarm(spark, tmp_path):
-    """streaming_cusum: accumulators persist; alarm latches on a level
-    shift and stays latched even if the signal returns to target."""
-    from pyspark.sql import types as T
-
-    from odbc2parquet_spark.streaming.monitors import streaming_cusum
-
-    src = tmp_path / "src"
-    out = tmp_path / "out"
-    ckpt = str(tmp_path / "ckpt")
-    src.mkdir()
-    schema = T.StructType(
-        [
-            T.StructField("event_type", T.StringType()),
-            T.StructField("ts", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-
-    def run_batch(rows, subdir):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(src / subdir)
-        )
-        stream = spark.readStream.schema(schema).option(
-            "recursiveFileLookup", "true"
-        ).parquet(str(src))
-        q = (
-            streaming_cusum(stream, target_mean=10.0, slack=0.5, threshold=5.0)
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    # batch 1 on-target: no alarm
-    run_batch([("a", i, 10.0) for i in range(4)], "b1")
-    # batch 2 shifted +3: s_pos grows by 2.5/event -> crosses 5.0
-    run_batch([("a", 10 + i, 13.0) for i in range(3)], "b2")
-    # batch 3 back on target: alarm must STAY latched
-    run_batch([("a", 20 + i, 10.0) for i in range(2)], "b3")
-
-    res = spark.read.parquet(str(out))
-    rows = {r.n: (r.s_pos, r.alarm) for r in res.collect()}
-    assert rows[4] == (0.0, False)
-    assert rows[7][0] == pytest.approx(7.5, abs=1e-6)
-    assert rows[7][1] is True
-    assert rows[9][1] is True      # latched through the recovery batch
-
-
-def test_streaming_distinct_matches_batch_hll(spark, tmp_path):
-    """streaming_distinct: HLL registers persist across availableNow runs
-    and the post-union estimate equals the batch sketch over the same
-    values (registers merge by MAX, so batching cannot matter)."""
-    from pyspark.sql import types as T
-
-    from odbc2parquet_spark.operators.sketches import hll_distinct_per_group
-    from odbc2parquet_spark.streaming.monitors import streaming_distinct
-
-    src = tmp_path / "src"
-    out = tmp_path / "out"
-    ckpt = str(tmp_path / "ckpt")
-    src.mkdir()
-    schema = T.StructType(
-        [
-            T.StructField("event_type", T.StringType()),
-            T.StructField("user_id", T.LongType()),
-        ]
-    )
-
-    def run_batch(rows, subdir):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(src / subdir)
-        )
-        stream = spark.readStream.schema(schema).option(
-            "recursiveFileLookup", "true"
-        ).parquet(str(src))
-        q = (
-            streaming_distinct(stream, "event_type", "user_id", p=8)
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    b1 = [("a", i) for i in range(0, 300)]
-    b2 = [("a", i) for i in range(150, 500)]  # overlaps b1: union = 500 distinct
-    run_batch(b1, "b1")
-    run_batch(b2, "b2")
-
-    import pyspark.sql.functions as F
-
-    res = {r.n_rows: r.estimate for r in spark.read.parquet(str(out)).collect()}
-    assert set(res) == {300, 650}  # post-batch row counts (650 = 300 + 350)
-
-    all_rows = spark.createDataFrame(b1 + b2, schema)
-    batch = hll_distinct_per_group(all_rows, ["event_type"], "user_id", p=8).first()
-    # same registers -> same estimate; the only divergence channel is the
-    # JVM-vs-CPython libm ln in the small-range branch, inside 1 ulp
-    assert res[650] == pytest.approx(batch.estimate, abs=0.01)
-    assert res[650] == pytest.approx(500, rel=0.2)  # ~1.04/sqrt(256) regime
-
-
-def test_streaming_topk_misra_gries_guarantee(spark, tmp_path):
-    """Misra-Gries state across availableNow batches: every value with
-    true frequency > n/(k+1) appears in the final summary, and counters
-    undercount by at most n/(k+1)."""
-    from collections import Counter
-
-    from pyspark.sql import types as T
-
-    from odbc2parquet_spark.streaming.monitors import streaming_topk
-
-    src = tmp_path / "src"
-    out = tmp_path / "out"
-    ckpt = str(tmp_path / "ckpt")
-    src.mkdir()
-    schema = T.StructType(
-        [
-            T.StructField("event_type", T.StringType()),
-            T.StructField("user_id", T.LongType()),
-        ]
-    )
-
-    def run_batch(rows, subdir):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(src / subdir)
-        )
-        stream = spark.readStream.schema(schema).option(
-            "recursiveFileLookup", "true"
-        ).parquet(str(src))
-        q = (
-            streaming_topk(stream, "event_type", "user_id", k=8)
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    # skewed stream: user 1 is ~40%, user 2 ~20%, the rest a long tail
-    b1 = [("a", 1)] * 40 + [("a", 2)] * 20 + [("a", 100 + i) for i in range(40)]
-    b2 = [("a", 1)] * 40 + [("a", 2)] * 20 + [("a", 200 + i) for i in range(40)]
-    run_batch(b1, "b1")
-    run_batch(b2, "b2")
-
-    res = spark.read.parquet(str(out))
-    final = {r.value: r for r in res.filter(res.n_rows == 200).collect()}
-    n, k = 200, 8
-    true = Counter(str(u) for _, u in b1 + b2)
-    for v, c in true.items():
-        if c > n / (k + 1):
-            assert v in final, f"heavy hitter {v} missing"
-            assert final[v].mg_count <= c
-            assert c - final[v].mg_count <= n / (k + 1)
-    assert len({r.value for r in final.values()}) <= k
-
-
-def test_running_totals_ttl_evicts_idle_keys(spark, tmp_path):
-    """Idle keys time out: a final closed=true snapshot ships, state drops,
-    and a returning user restarts from zero."""
-    import time
-
-    from pyspark.sql import types as T
-
-    from odbc2parquet_spark.streaming.stateful import running_user_totals_ttl
-
-    src = tmp_path / "src"
-    out = tmp_path / "out"
-    ckpt = str(tmp_path / "ckpt")
-    src.mkdir()
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-
-    def run_batch(rows, subdir):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(src / subdir)
-        )
-        stream = spark.readStream.schema(schema).option(
-            "recursiveFileLookup", "true"
-        ).parquet(str(src))
-        q = (
-            running_user_totals_ttl(stream, idle_ttl_ms=500)
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_batch([(1, 10.0), (1, 5.0)], "b1")
-    time.sleep(2)  # let user 1's 500ms idle TTL lapse
-    run_batch([(2, 7.0)], "b2")          # timeout fires for user 1 here
-    run_batch([(1, 1.0)], "b3")          # user 1 returns: fresh state
-
-    rows = sorted(
-        ((r.user_id, r.n_events, r.total_value, r.closed)
-         for r in spark.read.parquet(str(out)).collect())
-    )
-    assert (1, 2, 15.0, False) in rows           # live snapshot, batch 1
-    assert (1, 2, 15.0, True) in rows            # eviction tombstone
-    assert (1, 1, 1.0, False) in rows            # restarted from zero
-    assert (2, 1, 7.0, False) in rows
-
-
-@pytest.mark.slow
-def test_streaming_kmv_quantile_matches_batch_sample(spark, tmp_path):
-    """Bottom-k state across availableNow batches: the final sample is
-    the union's bottom-63 regardless of the micro-batch split, and the
-    emitted median equals the batch-computed lower median of that
-    sample (element pick — exact equality, no tolerance)."""
-    import hashlib
-
-    from pyspark.sql import types as T
-
-    from odbc2parquet_spark.streaming.monitors import streaming_kmv_quantile
-
-    src = tmp_path / "src"
-    out = tmp_path / "out"
-    ckpt = str(tmp_path / "ckpt")
-    src.mkdir()
-    schema = T.StructType(
-        [
-            T.StructField("event_type", T.StringType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-
-    def run_batch(rows, subdir):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(src / subdir)
-        )
-        stream = spark.readStream.schema(schema).option(
-            "recursiveFileLookup", "true"
-        ).parquet(str(src))
-        q = (
-            streaming_kmv_quantile(stream)
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    b1 = [("a", i, float((i * 37) % 100)) for i in range(0, 200)]
-    b2 = [("a", i, float((i * 37) % 100)) for i in range(200, 400)]
-    run_batch(b1, "b1")
-    run_batch(b2, "b2")
-
-    rows = {r.n_rows: r for r in spark.read.parquet(str(out)).collect()}
-    assert set(rows) == {200, 400}
-    final = rows[400]
-    assert final.n_sample == 63
-
-    # batch-expected: bottom-63 hashes over the UNION, lower median
-    pairs = []
-    for _, i, v in b1 + b2:
-        h = int(hashlib.md5(str(i).encode()).hexdigest()[:15], 16)
-        pairs.append((h, v))
-    samp = sorted(pairs)[:63]
-    by_val = sorted(samp, key=lambda p: (p[1], p[0]))
-    assert final.est_median == by_val[(63 + 1) // 2 - 1][1]
-
-
-@pytest.mark.slow
-def test_streaming_fingerprint_votes_matches_batch(spark, tmp_path, sf_dir):
-    """Stream-static constellation matching: draining the probe landmark
-    stream through the static index must reproduce the batch vote table
-    exactly (the stream-static join is stateless per row; only the vote
-    count aggregates)."""
-    from odbc2parquet_spark.catalog import load_table
-    from odbc2parquet_spark.operators import multimodal as M
-    from odbc2parquet_spark.streaming.transfer import streaming_fingerprint_votes
-    from pyspark.sql import functions as F
-
-    docs = load_table(spark, sf_dir, "documents")
-    peaks = M.audio_frame_peaks_q15(M.encode_wav(docs))
-    lms = M.audio_landmarks(peaks)
-    freq = lms.groupBy("l").agg(F.countDistinct("doc_id").alias("nd"))
-    idx = lms.join(freq.filter(F.col("nd") <= 64).select("l"), "l")
-    probe = lms.filter(
-        (F.col("doc_id") % 10 == 3) & (F.col("fi") >= 1)
-    ).select("doc_id", (F.col("fi") - 1).alias("fi"), "l")
-
-    src = str(tmp_path / "probes")
-    probe.write.parquet(src)
-    stream = spark.readStream.schema(probe.schema).parquet(src)
-    static_idx = idx.localCheckpoint(eager=True)
-    q = (
-        streaming_fingerprint_votes(stream, static_idx)
-        .writeStream.format("memory")
-        .queryName("fp_votes")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r.probe_doc, r.matched_doc, r.offset): r.votes
-        for r in spark.sql("select * from fp_votes").collect()
-    }
-    want = {
-        (r.probe_doc, r.matched_doc, r.offset): r.votes
-        for r in streaming_fingerprint_votes(probe, static_idx).collect()
-    }
-    assert got == want and len(want) > 0
-
-
-@pytest.mark.slow
-def test_streaming_holt_winters_matches_batch_across_restart(spark, tmp_path):
-    """The streaming HW fold must carry (level, trend, seasonal, t) across
-    availableNow restarts and land bit-identical to the batch operator
-    over the concatenated series."""
-    from odbc2parquet_spark.operators.rollup import holt_winters_forecast
-    from odbc2parquet_spark.streaming.monitors import streaming_holt_winters
-
-    from pyspark.sql import types as T2
-
-    xs = [10.0, 12.0, 8.0, 11.0, 13.0, 9.0, 14.0, 10.5, 12.5, 8.5, 15.0, 7.5]
-    rows = [("a", d, x) for d, x in enumerate(xs)]
-    src = tmp_path / "src"
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    src.mkdir()
-    schema = T2.StructType(
-        [
-            T2.StructField("key", T2.StringType()),
-            T2.StructField("day", T2.LongType()),
-            T2.StructField("x", T2.DoubleType()),
-        ]
-    )
-
-    def drain(batch_rows, subdir):
-        spark.createDataFrame(batch_rows, schema).coalesce(1).write.parquet(
-            str(src / subdir)
-        )
-        stream = spark.readStream.schema(schema).option(
-            "recursiveFileLookup", "true"
-        ).parquet(str(src))
-        q = (
-            streaming_holt_winters(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    drain(rows[:7], "b1")
-    drain(rows[7:], "b2")
-    res = spark.read.parquet(out)
-    final = max(res.collect(), key=lambda r: r.n_days)
-    batch = holt_winters_forecast(
-        spark.createDataFrame(rows, ["key", "day", "x"]),
-        period=7,
-        horizons=(1, 7),
-    ).collect()[0]
-    assert final.level == batch.level
-    assert final.trend == batch.trend
-    assert final.f1 == batch.f1
-    assert final.f7 == batch.f7
