@@ -1,10 +1,10 @@
-"""Benchmark: headline queries + transfer workload at $SPARK_GRAFT_SF_DIR.
+"""Benchmark: the bench queries + transfer workload at $SPARK_GRAFT_SF_DIR.
 
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Query set: the scale-path operators (no all-pairs quadratics — those are
-verification operators, exercised at sf0.01 by the correctness gate).
+Query set: ``queries.BENCH``, the registry's ``bench=True`` queries (the
+``query`` decorator's docstring gives the rule for leaving one out).
 Each query is fully materialized through the noop sink (no driver collect),
 so the measured time is plan execution, not result transfer.
 
@@ -27,308 +27,6 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-#: headline set: relational core + type mapping + scale-path extensions
-HEADLINE = [
-    "q1_pricing_summary",
-    "q_filter_pushdown",
-    "q_join_revenue_topn",
-    "q_semi_join",
-    "q_broadcast_dims",
-    "q_window_topk_per_group",
-    "q_window_running_sum",
-    "q_rollup",
-    "q_orderby_limit",
-    "q_distinct_count",
-    "q5_local_supplier_volume",
-    "q_percentiles",
-    "q_kmv_distinct",
-    "q_heavy_hitters",
-    "tm_decimal_matrix",
-    "tm_time_of_day",
-    "dd_exact",
-    "dd_minhash_signatures",
-    "dd_minhash_lsh",
-    "dd_simhash",
-    "dd_simhash_banded",
-    "sim_lsh_signatures",
-    "sim_bruteforce_topk",
-    "sim_ivf_assign",
-    "sim_ivf_topk",
-    "tx_token_stats",
-    "tx_quality_scores",
-    "tx_language_id",
-    "tx_fingerprint",
-    "ev_windowed_counts",
-    "ev_sessionized",
-    "ev_asof_last_purchase",
-    "ev_range_join_bands",
-    "ev_rollup_daily",
-    "mm_decode_features",
-    "mm_resize",
-    "tx_prepare_corpus",
-    "tx_pack_shards",
-    # round 2: TPC-H Q7..Q22 suite (queries/tpch.py)
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q10_returned_items",
-    "q12_ship_lag_priority",
-    "q13_order_distribution",
-    "q15_top_supplier",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customers",
-    "q19_discounted_revenue",
-    "q21_latest_supplier",
-    "q22_dormant_customers",
-    # round 2: corpus-curation additions (queries/textops.py)
-    "tx_repetition",
-    "tx_boilerplate_ngrams",
-    "tx_contamination",
-    "tx_domain_mix",
-    "ev_value_anomalies",
-    "ev_funnel",
-    "ev_weekly_retention",
-    "tx_chunk_documents",
-    "q2_min_balance_supplier",
-    "q9_product_profit",
-    "q11_important_parts",
-    "q16_supplier_variety",
-    "q20_heavy_shippers",
-    # round 3: streaming batch duals
-    "ev_interval_join",
-    "dd_streaming_dedup",
-    # round 3: substring dedup + embedding curation
-    "dd_repeated_ngrams",
-    "sim_label_centroids",
-    "sim_centroid_outliers",
-    "dd_incremental_minhash",
-    "sim_hybrid_search",
-    # round 3 (cont.): Q3, PII scrub, k-NN graph, lateness audit, per-day KMV
-    # (dd_keep_best is excluded like dd_dup_clusters: its edges come from the
-    # all-pairs cosine VERIFICATION operator; the scale path runs the same
-    # keep-best aggregation on LSH pairs)
-    "q3_shipping_priority",
-    "tx_pii_redact",
-    "sim_knn_graph",
-    "ev_late_audit",
-    "ev_kmv_daily_users",
-    "dd_keep_best_minhash",
-    "sim_pagerank",
-    "sim_random_projection",
-    "tx_tokenize_vocab",
-    "tx_length_histogram",
-    "tx_epoch_shuffle",
-    "mm_decode_video",
-    "dd_bloom_gate",
-    "ev_binned_quantiles",
-    "q_upsert_latest",
-    "ev_scd2_intervals",
-    "ev_funnel_windowed",
-    "tx_train_val_split",
-    "q_unpivot_metrics",
-    "sim_multiprobe_pairs",
-    "sim_banded_pairs",
-    "sim_negative_samples",
-    "tx_cooccurrence_lift",
-    "tx_quality_calibrated",
-    "q_table_diff",
-    "tx_pipeline_funnel",
-    "dd_containment_lsh",
-    "tx_dsir_weights",
-    # round 3 (cont. session): cell-scoped SemDeDup, BM25 retrieval,
-    # blocked fuzzy entity resolution
-    "dd_semantic_cells",
-    "tx_bm25_topk",
-    "q_fuzzy_match",
-    "sim_triangle_count",
-    "sim_ivf_refine",
-    "mm_audio_rms",
-    "mm_pixel_stats",
-    "mm_resize_real",
-    "mm_frame_index",
-    "sim_pq_adc_topk",
-    "sim_ivf_pq_topk",
-    # round 4: span scrub, Z-order layout, pattern paths, source caps
-    "dd_span_scrub",
-    "q_zorder_cluster",
-    "ev_pattern_paths",
-    "tx_source_cap",
-    "ev_skew_profile",
-    "mm_dhash",
-    "mm_dhash_pairs",
-    "sim_mmr_topk",
-    "tx_bpe_pairs",
-    "q_dq_checks",
-    "ev_agg_merge",
-    "ev_resample_interp",
-    "dd_group_split",
-    "q_bloom_semi_join",
-    "tx_hash_embed",
-    "tx_text_ann",
-    "ev_sliding_window",
-    "tm_variant_json",
-    "mm_png_stats",
-    # round 5: production-shape batched BPE (50 merges, ~5 rounds),
-    # systematic PPS corpus sampling, decayed per-user EWMA
-    "tx_bpe_learn50",
-    "tx_pps_sample",
-    "ev_ewma_decay",
-    "tx_dedup_normalize",
-    "ev_attribution",
-    "ev_winsorize",
-    "ev_time_to_convert",
-    "ev_ab_test",
-    "q_nest_order_lines",
-    "q_k_anonymity",
-    "q_tree_closure",
-    "ev_peak_concurrency",
-    "ev_mad_outliers",
-    "ev_rolling_trend",
-    # round 5 (cont.): drift / rank-statistic monitoring layer
-    "ev_psi_drift",
-    "ev_ks_test",
-    "ev_roc_auc",
-    "q_gini_supplier",
-    "q_chi_square_priority",
-    "sim_covariance",
-    # round 6: correlation matrix + CUSUM changepoint join the audit set
-    "sim_correlation",
-    "ev_cusum",
-    # round 6 (cont.): skyline frontier, seasonal decomposition, BPE encode
-    "q_skyline_parts",
-    "ev_stl_decompose",
-    "tx_bpe_encode",
-    "mm_scene_cut",
-    # round 6 (cont.): HLL registers, weighted reservoir, n-gram novelty,
-    # leave-one-out target encoding
-    "ev_hll_daily_users",
-    "tx_reservoir_sample",
-    "tx_novelty",
-    "q_target_encode",
-    "dd_prefix_jaccard",
-    "q_kmv_overlap",
-    "q_exact_median",
-    "ev_purged_split",
-    "ev_hll_weekly_users",
-    "sim_kcore_cert",
-    "tx_kfold_assign",
-    "ev_hll_cumulative",
-    "ev_new_vs_returning",
-    "tx_temperature_mix",
-    "mm_video_neardup",
-    "ev_seasonal_anomalies",
-    "q_entity_resolution",
-    "ev_holt_forecast",
-    "sim_centroid_shift",
-    "mm_audio_neardup",
-    # round-8 additions
-    "tx_bigram_lm_score",
-    "tx_ccnet_buckets",
-    "tx_gopher_rules",
-    "tx_curation_verdict",
-    "dd_soft_dedup",
-    "dd_cdc_chunks",
-    "sim_jaccard_links",
-    "mm_audio_vad",
-    "tx_kneser_ney_score",
-    "sim_nprobe_curve",
-    "tx_ccnet_lang_buckets",
-    "dd_minhash_estimate",
-    "sim_knn_classifier",
-    "mm_audio_clipping",
-    "mm_image_entropy",
-    # round-9 additions
-    "sim_ppr",
-    "tx_naive_bayes",
-    "sim_silhouette",
-    "tx_source_overlap",
-    "mm_blur_score",
-    "mm_audio_tone",
-    "ev_decay_topk",
-    "q_l_diversity",
-    "tx_stupid_backoff",
-    "sim_rrf_fusion",
-    "tx_neg_sample_table",
-    "ev_kmv_quantile",
-    "mm_keyframes",
-    "q_join_card_est",
-    "tx_hash_collisions",
-    "sim_ivf_pq_res_topk",
-    "sim_ivf_pq_res_recall",
-    "tx_conformal_interval",
-    "sim_maxsim_topk",
-    "tx_nb_confusion",
-    "dd_band_curve",
-    "ev_stickiness",
-    "sim_hits",
-    "sim_lpa_communities",
-    "ev_acf",
-    "ev_theilsen",
-    "ev_removal_effect",
-    "mm_audio_fingerprint",
-    "dd_bleu_pairs",
-    "q_dp_histogram",
-    "ev_cohort_ltv",
-    "mm_video_align",
-    "sim_clustering_coeff",
-    "ev_sprt",
-    "tx_ht_estimate",
-    "mm_phash_dct",
-    "mm_phash_pairs",
-    "sim_cell_medoids",
-    "sim_ivf_delta_assign",
-    "ev_bot_regularity",
-    "mm_hash_agreement",
-    "tx_keyness",
-    "sim_cluster_purity",
-    "ev_holt_winters",
-    "dd_method_agreement",
-    "dd_rouge_pairs",
-    "ev_occupancy",
-    "dd_template_groups",
-    "ev_hw_backtest",
-    "sim_embedding_profile",
-    "tx_char_entropy",
-    "dd_winnowing_pairs",
-    "tx_decontaminate_13gram",
-    # round-9: the frozen production ANN operating point (recall >= 0.6 gate)
-    "sim_recall_floor",
-    # round-9: the four r8 additions that had no bench/scaling row yet
-    "ev_km_survival",
-    "ev_rfm_segments",
-    "ev_shapley_attribution",
-    "sim_pca_power",
-    # round-10: the composed end-to-end curation pipeline (ANN recall gate +
-    # CCNet terciles + 13-gram decontamination + shard packing) — the
-    # closest local proxy for the 100 TB composed workload; surfaces
-    # cross-operator checkpoint/persist interference per-query entries hide
-    "tx_curation_pipeline",
-    # round-10: suffix-array duplicated spans + truncation observability
-    "dd_suffix_lcp",
-    "dd_truncation_audit",
-    # round-10: the cross-trained CCNet LM (reference-trained, crawl-scored)
-    "tx_ccnet_crosslm",
-    # round-10: the implemented rank->cutpoint tercile substitution
-    "tx_ccnet_cutpoints",
-    # round-11: the UNCACHED LSH edge build. The graph family
-    # (sim_pagerank/ppr/hits/lpa/clustering) shares one memoized
-    # checkpointed edge list, so their medians exclude the
-    # signature+bucket build cost on all but the first construction —
-    # this entry keeps that build independently tracked in BENCH_DETAIL
-    # so a regression in lsh_signatures/lsh_bucket_pairs can't hide.
-    "sim_lsh_bucket_pairs",
-    # round-11: the occupancy-DERIVED bucket width (buckets ~ n/64) — the
-    # measured SCALE.md prefix_bits rule as code rather than documentation
-    "sim_lsh_auto_occupancy",
-    # round-11: the incremental curation arm — a new crawl batch curated
-    # against persisted corpus state (band-key index, corpus-trained LM +
-    # frozen cutpoint, eval gram index, live IVF centroids)
-    "tx_curation_delta",
-    # round-11: banded SimHash at the occupancy-derived band width (the
-    # sf31 family sweep caught the fixed 8-bit bands going quadratic)
-    "dd_simhash_banded_auto",
-]
-
 
 #: hard cap for the stdout summary line — the driver keeps only the last
 #: 2000 chars of bench output, so the line must survive tail truncation
@@ -468,8 +166,22 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    from odbc2parquet_spark.queries import QUERIES
+    from odbc2parquet_spark.queries import BENCH, QUERIES
     from odbc2parquet_spark.session import get_spark
+
+    # SPARK_GRAFT_BENCH_ONLY="q1,q2" restricts the suite (scaling studies
+    # re-measure just the worst scalers at a new decade without paying for
+    # the full sweep twice); a name outside the suite stops the run before
+    # Spark starts, so a typo cannot bench nothing
+    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
+    picked = {s.strip() for s in only.split(",")} - {""} if only else set()
+    unknown = sorted(picked - {*BENCH, "transfer_lineitem", "bpe_learn_500"})
+    if unknown:
+        sys.exit(
+            "SPARK_GRAFT_BENCH_ONLY names entries outside the bench suite: "
+            + ", ".join(unknown)
+        )
+    suite = [q for q in BENCH if q in picked] if only else BENCH
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -497,21 +209,12 @@ def main() -> None:
     # medians over shuffled orders cancel position effects.
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
 
-    # SPARK_GRAFT_BENCH_ONLY="q1,q2" restricts the suite (scaling studies
-    # re-measure just the worst scalers at a new decade without paying for
-    # the full 120+-query sweep twice)
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     # per-query cache isolation (scaling mode sets it; see the rep loop)
     isolate = bool(os.environ.get("SPARK_GRAFT_BENCH_ISOLATE"))
-    headline = (
-        [q for q in HEADLINE if q in {s.strip() for s in only.split(",")}]
-        if only
-        else HEADLINE
-    )
 
-    samples: dict[str, list[float]] = {name: [] for name in headline}
+    samples: dict[str, list[float]] = {name: [] for name in suite}
     samples["transfer_lineitem"] = []
-    if not only or "bpe_learn_500" in {s.strip() for s in only.split(",")}:
+    if not only or "bpe_learn_500" in picked:
         samples["bpe_learn_500"] = []
     transfer_rows = 0
 
@@ -557,7 +260,7 @@ def main() -> None:
         samples["bpe_learn_500"].append(time.time() - t0)
 
     for rep in range(reps):
-        order: list[str] = ["transfer_lineitem", *headline]
+        order: list[str] = ["transfer_lineitem", *suite]
         if rep == 0 and "bpe_learn_500" in samples:
             order.append("bpe_learn_500")
         random.Random(rep).shuffle(order)

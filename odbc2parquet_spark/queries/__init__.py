@@ -24,15 +24,25 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+#: the bench suite (bench.py), in registration order
+BENCH: list[str] = []
 
 
-def query(name: str, oracle: str | None = None):
-    """Register a named query (and optionally its DuckDB oracle SQL)."""
+def query(name: str, oracle: str | None = None, bench: bool = True):
+    """Register a named query (and optionally its DuckDB oracle SQL).
+
+    The bench times the scale-path operators. ``bench=False`` leaves a
+    verification operator out of :data:`BENCH`: the all-pairs quadratics,
+    most recall checks and the type-mapping checks. The oracle gate still
+    runs every registered query.
+    """
 
     def deco(fn: QueryFn) -> QueryFn:
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
+        if bench:
+            BENCH.append(name)
         return fn
 
     return deco

@@ -49,6 +49,7 @@ def dd_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dd_ngram_jaccard",
+    bench=False,
     oracle="WITH "
     + _SHINGLES_CTE.format(where=" WHERE doc_id < 200")
     + """,
@@ -190,6 +191,7 @@ def dd_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dd_simhash_pairs",
+    bench=False,
     oracle="WITH "
     + _SIMHASH_CTE
     + """
@@ -301,6 +303,7 @@ def dd_simhash_banded_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dd_embedding_cosine",
+    bench=False,
     oracle="""
     WITH n AS (
         SELECT vec_id,
@@ -370,7 +373,7 @@ _CLUSTERS_ORACLE = """
     """
 
 
-@query("dd_dup_clusters", oracle=_CLUSTERS_ORACLE)
+@query("dd_dup_clusters", oracle=_CLUSTERS_ORACLE, bench=False)
 def dd_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs -> duplicate CLUSTERS via iterative min-label
     propagation (operators/graph.connected_components) with min-id keeper
@@ -384,7 +387,7 @@ def dd_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return duplicate_clusters(nodes, pairs)
 
 
-@query("dd_dup_clusters_star", oracle=_CLUSTERS_ORACLE)
+@query("dd_dup_clusters_star", oracle=_CLUSTERS_ORACLE, bench=False)
 def dd_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same clusters via large-star/small-star contraction
     (operators/graph.connected_components_star) — the O(log n)-round scale
@@ -400,6 +403,7 @@ def dd_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dd_incremental_exact",
+    bench=False,
     oracle="""
     WITH existing AS (SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id < 250),
     batch AS (SELECT doc_id, md5(text) AS h FROM documents WHERE doc_id >= 250),
@@ -446,6 +450,7 @@ _SIMHASH_WEIGHTED_CTE = (
 
 @query(
     "dd_simhash_weighted",
+    bench=False,
     oracle="WITH " + _SIMHASH_WEIGHTED_CTE + " SELECT id AS doc_id, simhash FROM sig",
 )
 def dd_simhash_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -565,8 +570,12 @@ def dd_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.incremental_minhash_dedup(existing, batch, threshold=0.5)
 
 
+# Not benched: its edges come from the all-pairs cosine verification
+# operator (dd_embedding_cosine). dd_keep_best_minhash benches the same
+# keep-best aggregation on LSH pairs.
 @query(
     "dd_keep_best",
+    bench=False,
     oracle=f"""
     SELECT cluster_id, keep_id, keep_quality, cluster_size,
            cluster_size - 1 AS n_dropped
@@ -731,6 +740,7 @@ def dd_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dd_containment",
+    bench=False,
     oracle="WITH "
     + _SHINGLES_CTE.format(where=" WHERE doc_id < 200")
     + """,
@@ -892,6 +902,7 @@ def dd_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dd_lsh_recall",
+    bench=False,
     oracle="WITH "
     + _SHINGLES_CTE.format(where="")
     + f""",
@@ -1040,6 +1051,7 @@ def dd_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dd_boundary_overlap",
+    bench=False,
     oracle="""
     WITH t AS (
         SELECT doc_id,

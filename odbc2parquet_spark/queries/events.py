@@ -886,6 +886,7 @@ def ev_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ev_props_json",
+    bench=False,
     oracle="""
     SELECT CAST(json_extract(props, '$.k') AS BIGINT) AS k_bucket,
            CAST(COUNT(*) AS BIGINT) AS n,
@@ -916,6 +917,7 @@ def ev_props_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ev_transitions",
+    bench=False,
     oracle="""
     WITH seq AS (
         SELECT user_id, event_type,
@@ -945,6 +947,7 @@ def ev_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ev_resample_daily",
+    bench=False,
     oracle="""
     WITH ev AS (
         SELECT user_id AS key, epoch_us(ts) AS ts_us, event_id AS id, value AS v,
@@ -990,6 +993,7 @@ _TYPE_WEIGHTS_SQL = ", ".join(f"('{t}', {w})" for t, w in _TYPE_WEIGHTS)
 
 @query(
     "ev_salted_join",
+    bench=False,
     oracle=f"""
     WITH dim(event_type, weight) AS (VALUES {_TYPE_WEIGHTS_SQL})
     SELECT e.event_type,
@@ -1022,6 +1026,7 @@ def ev_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ev_asof_next_purchase",
+    bench=False,
     oracle="""
     WITH clicks AS (
         SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'

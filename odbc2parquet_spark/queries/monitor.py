@@ -433,6 +433,7 @@ def ev_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ev_mase_eval",
+    bench=False,
     oracle="""
     WITH daily AS (
         SELECT event_type, CAST(ts AS DATE) AS d,
@@ -518,6 +519,7 @@ def ev_mase_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ev_benford_deviation",
+    bench=False,
     oracle="""
     WITH iv AS (
         SELECT CAST(FLOOR(value * 1000000) AS BIGINT) AS i

@@ -105,6 +105,7 @@ def q_filter_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_param_binding",
+    bench=False,
     oracle="""
     SELECT o_orderkey, o_totalprice
     FROM orders
@@ -181,6 +182,7 @@ def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_anti_join",
+    bench=False,
     oracle="""
     SELECT c_mktsegment, COUNT(*) AS customers_without_orders
     FROM customer
@@ -233,6 +235,7 @@ def q_broadcast_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_outer_join",
+    bench=False,
     oracle="""
     SELECT c.c_custkey, COUNT(o.o_orderkey) AS n_orders
     FROM customer c
@@ -327,6 +330,7 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_cube",
+    bench=False,
     oracle="""
     SELECT l_returnflag, l_linestatus,
            CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty
@@ -341,6 +345,7 @@ def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_grouping_sets",
+    bench=False,
     oracle="""
     SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
     FROM orders
@@ -400,6 +405,7 @@ def q_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_set_intersect",
+    bench=False,
     oracle="""
     SELECT c_custkey AS custkey FROM customer
     INTERSECT
@@ -414,6 +420,7 @@ def q_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_set_except",
+    bench=False,
     oracle="""
     SELECT c_custkey AS custkey FROM customer
     EXCEPT
@@ -428,6 +435,7 @@ def q_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_union_all",
+    bench=False,
     oracle="""
     SELECT k, src, COUNT(*) AS n FROM (
         SELECT l_orderkey AS k, 'li' AS src FROM lineitem
@@ -456,6 +464,7 @@ def q_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_scalar_functions",
+    bench=False,
     oracle="""
     SELECT o_orderkey,
            UPPER(o_orderpriority) AS pri_upper,
@@ -493,6 +502,7 @@ def q_scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_having_subquery",
+    bench=False,
     oracle="""
     SELECT l_suppkey, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS total
     FROM lineitem
@@ -525,6 +535,7 @@ def q_having_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_exists_correlated",
+    bench=False,
     oracle="""
     SELECT c_custkey, c_name
     FROM customer c
@@ -560,6 +571,7 @@ def q_exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_scalar_subquery",
+    bench=False,
     oracle="""
     SELECT n_name,
            (SELECT COUNT(*) FROM customer c JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
@@ -585,6 +597,7 @@ def q_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_pivot_status",
+    bench=False,
     oracle="""
     SELECT o_custkey,
            COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS n_open,
@@ -747,6 +760,7 @@ def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_null_ordering",
+    bench=False,
     oracle="""
     SELECT o_orderkey,
            CASE WHEN o_orderstatus = 'P' THEN NULL ELSE o_totalprice END AS maybe_price
@@ -774,6 +788,7 @@ def q_null_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q6_forecast_revenue",
+    bench=False,
     oracle="""
     SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))) AS DOUBLE)
            AS revenue,
@@ -806,6 +821,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q4_order_priority",
+    bench=False,
     oracle="""
     SELECT o_orderpriority, COUNT(*) AS order_count
     FROM orders
@@ -837,6 +853,7 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q14_promo_revenue",
+    bench=False,
     oracle="""
     SELECT CAST(100.00 * SUM(CASE WHEN p_type LIKE 'PROMO%'
                      THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))
@@ -872,6 +889,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_profile_lineitem",
+    bench=False,
     oracle="""
     SELECT 'l_orderkey' AS column_name,
            CAST(SUM(CASE WHEN l_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
@@ -1432,6 +1450,7 @@ def q_tree_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_weighted_median",
+    bench=False,
     oracle="""
     WITH agg AS (
         SELECT l_extendedprice AS v,

@@ -157,6 +157,7 @@ def mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mm_frame_sample",
+    bench=False,
     oracle="""
     SELECT doc_id, i AS frame_no,
            ascii(substring(text, (i - 1) * 97 + 1, 1)) AS byte_val
@@ -328,6 +329,7 @@ def tx_pack_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_bigram_surprisal",
+    bench=False,
     oracle="""
     WITH w AS (
         SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '') AS ws
@@ -358,6 +360,7 @@ _SAMPLE_FRACS = {"en": 0.5, "de": 1.0, "es": 0.25}
 
 @query(
     "tx_stratified_sample",
+    bench=False,
     oracle=f"""
     SELECT doc_id, lang
     FROM documents
@@ -383,6 +386,7 @@ def tx_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_mixture_sample",
+    bench=False,
     oracle=f"""
     WITH counts AS (
         SELECT source AS src, COUNT(*) AS n FROM documents
@@ -572,6 +576,7 @@ def tx_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mm_embed",
+    bench=False,
     oracle="""
     SELECT doc_id, CAST(j AS INTEGER) AS pos,
            ROUND(CAST('0x' || substring(md5(text || ':' || CAST(j AS VARCHAR)), 1, 6)
@@ -595,6 +600,7 @@ def mm_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mm_decode_real",
+    bench=False,
     oracle="""
     SELECT doc_id, 'bmp' AS fmt,
            CAST(length(text) % 64 + 1 AS INTEGER) AS width,
@@ -617,6 +623,7 @@ def mm_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mm_decode_audio",
+    bench=False,
     oracle="""
     SELECT doc_id, 'wav' AS fmt,
            CAST(8000 + (length(text) % 8) * 1000 AS INTEGER) AS sample_rate,
@@ -642,6 +649,7 @@ def mm_decode_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_cms_word_freq",
+    bench=False,
     oracle="""
     WITH wf AS (
         SELECT unnest(string_split(text, ' ')) AS w FROM documents
@@ -697,6 +705,7 @@ def tx_cms_word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_tfidf_density",
+    bench=False,
     oracle="""
     WITH occ AS (
         SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> x != '')) AS w
@@ -743,6 +752,7 @@ def tx_tfidf_density(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_corpus_report",
+    bench=False,
     oracle="""
     WITH base AS (
         SELECT lang, source,
@@ -1973,6 +1983,7 @@ def tx_pps_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_zipf_fit",
+    bench=False,
     oracle="""
     WITH words AS (
         SELECT unnest(string_split(text, ' ')) AS w FROM documents
@@ -2062,6 +2073,7 @@ def tx_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_keyword_topk",
+    bench=False,
     oracle="""
     WITH words AS (
         SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents

@@ -58,6 +58,7 @@ def tm_decimal_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tm_timestamp_tiers",
+    bench=False,
     oracle="""
     SELECT l_orderkey, l_linenumber,
            epoch_ms(l_shipdate) AS ts_millis,
@@ -84,6 +85,7 @@ def tm_timestamp_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tm_date_mapping",
+    bench=False,
     oracle="""
     SELECT o_orderkey,
            CAST(o_orderdate AS DATE) AS order_date,
@@ -138,6 +140,7 @@ def tm_time_of_day(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tm_boolean_bits",
+    bench=False,
     oracle="""
     SELECT event_id,
            value > 50 AS is_high,
@@ -161,6 +164,7 @@ def tm_boolean_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tm_binary_bytes",
+    bench=False,
     oracle="""
     SELECT p_partkey,
            hex(encode(p_brand)) AS brand_hex,
@@ -191,6 +195,7 @@ def tm_binary_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tm_integer_widths",
+    bench=False,
     oracle="""
     SELECT l_orderkey,
            CAST(l_linenumber AS TINYINT)  AS i8,
@@ -219,6 +224,7 @@ def tm_integer_widths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tm_float_widths",
+    bench=False,
     oracle="""
     SELECT s_suppkey,
            CAST(s_acctbal AS REAL) AS f32,
@@ -239,6 +245,7 @@ def tm_float_widths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tm_text_fallback",
+    bench=False,
     oracle="""
     SELECT o_orderkey,
            CAST(o_orderkey AS VARCHAR) AS key_text,
@@ -262,6 +269,7 @@ def tm_text_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tm_timestamptz_utc",
+    bench=False,
     oracle="""
     SELECT event_id,
            epoch_us(ts) AS instant_us,
@@ -286,6 +294,7 @@ def tm_timestamptz_utc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tm_avoid_decimal",
+    bench=False,
     oracle="""
     SELECT o_orderkey,
            CAST(ROUND(o_totalprice * 100) AS BIGINT) AS price_scaled_int,

@@ -627,14 +627,17 @@ def audit_output(paths: list[str]) -> dict:
     (reference analogue: the reference trusts its single writer loop,
     src/query/mod.rs — a distributed writer earns the explicit audit).
 
-    ``paths`` is write_parquet's return value (files or directories).
+    ``paths`` is write_parquet's return value (files or directories). A
+    directory is searched recursively, so hive-partitioned output
+    (``col=val/part-*.parquet``) counts too.
     """
     import pyarrow.parquet as pq
 
     files: list[str] = []
     for p in paths:
         if os.path.isdir(p):
-            files.extend(sorted(glob.glob(os.path.join(p, "*.parquet"))))
+            pattern = os.path.join(p, "**", "*.parquet")
+            files.extend(sorted(glob.glob(pattern, recursive=True)))
         else:
             files.append(p)
     n_rows = n_groups = 0

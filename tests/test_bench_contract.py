@@ -7,9 +7,11 @@ import json
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE, SUMMARY_LINE_BUDGET, compact_summary
+from bench import SUMMARY_LINE_BUDGET, compact_summary
 
 
 def _base(n):
@@ -86,18 +88,64 @@ def test_summary_pin_tolerates_unparsed_round():
 
 
 def test_scaling_set_is_benchable():
-    from bench import HEADLINE, SCALING_SET
+    from bench import SCALING_SET
+    from odbc2parquet_spark.queries import BENCH
 
     assert len(SCALING_SET) == len(set(SCALING_SET))
-    assert [q for q in SCALING_SET if q not in HEADLINE] == []
+    assert [q for q in SCALING_SET if q not in BENCH] == []
 
 
-def test_headline_has_no_duplicates_or_unknown_queries():
-    assert len(HEADLINE) == len(set(HEADLINE))
-    from odbc2parquet_spark.queries import QUERIES
+def test_bench_is_the_registry_in_order_and_the_rest_stay_gated():
+    # BENCH is derived from the @query decorators: registry order, no
+    # duplicates; a query left out of the bench still has its oracle, so
+    # the correctness gate covers it
+    from odbc2parquet_spark.queries import BENCH, ORACLES, QUERIES
 
-    missing = [q for q in HEADLINE if q not in QUERIES]
-    assert missing == []
+    assert BENCH == [q for q in QUERIES if q in set(BENCH)]
+    assert [q for q in QUERIES if q not in BENCH and q not in ORACLES] == []
+
+
+def test_bench_only_rejects_unknown_names_before_spark(monkeypatch):
+    # a typo in SPARK_GRAFT_BENCH_ONLY used to bench nothing but the
+    # transfer and still write BENCH_DETAIL_SUBSET.json
+    import bench
+    from odbc2parquet_spark import session
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("a Spark session was started")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    monkeypatch.setenv(
+        "SPARK_GRAFT_BENCH_ONLY",
+        "q1_pricing_summary, q1_pricng_summary,tm_binary_bytes,bpe_learn_500",
+    )
+    with pytest.raises(SystemExit) as exc:
+        bench.main()
+    msg = str(exc.value.code)
+    # the typo and the registered-but-not-benched query are both named
+    assert "q1_pricng_summary" in msg and "tm_binary_bytes" in msg
+    assert "q1_pricing_summary" not in msg and "bpe_learn_500" not in msg
+
+
+def test_score_history_marks_any_false_verdict_red(tmp_path, monkeypatch):
+    # a row is red when err is set or any of rows/schema/hash is False,
+    # also when the hash verdict is missing
+    import __spark_entry__ as entry
+
+    green = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+    (tmp_path / "CORRECTNESS_r01.json").write_text(
+        json.dumps({"a": green, "b": green, "c": green, "d": green})
+    )
+    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({
+        "a": {**green, "schema_match": False, "hash_match": None},
+        "b": {**green, "rows_match": False, "hash_match": None},
+        "c": {**green, "err": "boom", "hash_match": None},
+        "d": green,
+    }))
+    monkeypatch.setattr(entry, "__file__", str(tmp_path / "__spark_entry__.py"))
+    last, red = entry._score_history()
+    assert red == {"a", "b", "c"}
+    assert last == {"a": 2, "b": 2, "c": 2, "d": 2}
 
 
 def test_select_movers_flags_only_real_ratio_movers():

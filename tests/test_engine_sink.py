@@ -604,8 +604,9 @@ def test_resplit_reads_staged_bytes_not_source(spark, tmp_path):
 
 
 def test_audit_output_reconciles_row_counts(spark, tmp_path):
-    """Footer-only audit equals the source count in both directory and
-    split-file modes — the post-write reconciliation gate."""
+    """Footer-only audit equals the source count in directory,
+    hive-partitioned directory and split-file modes — the post-write
+    reconciliation gate."""
     from odbc2parquet_spark.sinks.parquet_sink import (
         SinkOptions,
         audit_output,
@@ -627,3 +628,14 @@ def test_audit_output_reconciles_row_counts(spark, tmp_path):
     a2 = audit_output(paths2)
     assert a2["n_rows"] == 10_000
     assert a2["n_files"] == len(paths2) > 1
+
+    # hive-partitioned directory: the files sit under col=val/ subdirectories
+    parted = str(tmp_path / "parted")
+    paths3 = write_parquet(
+        df.selectExpr("id", "s", "CAST(id % 3 AS INT) AS k"),
+        parted,
+        SinkOptions(partition_by=("k",)),
+    )
+    a3 = audit_output(paths3)
+    assert a3["n_rows"] == 10_000
+    assert a3["n_files"] >= 3

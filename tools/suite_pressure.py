@@ -54,7 +54,8 @@ def main() -> None:
     n_queries = int(sys.argv[1]) if len(sys.argv) > 1 else 10**9
     stride = int(sys.argv[2]) if len(sys.argv) > 2 else 15
 
-    from bench import HEADLINE, run_query
+    from bench import run_query
+    from odbc2parquet_spark.queries import BENCH
     from odbc2parquet_spark.session import get_spark
 
     spark = get_spark("suite_pressure")
@@ -65,7 +66,7 @@ def main() -> None:
     run_query(spark, CANARY, sf_dir)
     run_query(spark, CANARY, sf_dir)
 
-    suite = [q for q in HEADLINE if q != CANARY][:n_queries]
+    suite = [q for q in BENCH if q != CANARY][:n_queries]
     points = []
 
     def canary_point(pos: int) -> None:
