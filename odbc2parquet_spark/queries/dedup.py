@@ -32,6 +32,104 @@ def _minhash_min(j: int) -> str:
     return f"MIN(({h1} + {j} * {h2}) % {1 << 60}) AS mh{j}"
 
 
+# shared oracle CTEs over _SHINGLES_CTE's ``sh``: the 8-hash signature,
+# its 4 bands of 2 rows (buckets capped at 1000 ids), the candidate pairs
+_MINHASH_MINS = ", ".join(_minhash_min(j) for j in range(8))
+
+_MINHASH_SIG_CTE = f"""
+    sig AS (
+        SELECT id, {_MINHASH_MINS}
+        FROM sh GROUP BY id
+    )"""
+
+_MINHASH_BANDS_CTE = """
+    bands AS (
+        SELECT id, 0 AS band, mh0 || '_' || mh1 AS key FROM sig
+        UNION ALL SELECT id, 1, mh2 || '_' || mh3 FROM sig
+        UNION ALL SELECT id, 2, mh4 || '_' || mh5 FROM sig
+        UNION ALL SELECT id, 3, mh6 || '_' || mh7 FROM sig
+    ),
+    bands_capped AS (
+        SELECT id, band, key FROM bands
+        QUALIFY COUNT(*) OVER (PARTITION BY band, key) <= 1000
+    )"""
+
+_MINHASH_CAND_CTE = (
+    _MINHASH_BANDS_CTE
+    + """,
+    cand AS (
+        SELECT DISTINCT a.id AS id_a, b.id AS id_b
+        FROM bands_capped a
+        JOIN bands_capped b ON a.band = b.band AND a.key = b.key AND a.id < b.id
+    )"""
+)
+
+# shingles -> signatures -> bands -> candidate pairs
+_CAND_CTE = _SHINGLES_CTE.format(where="") + "," + _MINHASH_SIG_CTE + "," + _MINHASH_CAND_CTE
+
+# the ingestion gate: the batch documents (id >= 250) with a verified
+# near-dup in the corpus (id < 250), from ``sig`` on
+_INCREMENTAL_DROPPED_CTE = (
+    _MINHASH_BANDS_CTE
+    + """,
+    cand AS (
+        SELECT DISTINCT b.id AS new_id, a.id AS old_id
+        FROM bands_capped a JOIN bands_capped b ON a.band = b.band AND a.key = b.key
+        WHERE a.id < 250 AND b.id >= 250
+    ),
+    sizes AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
+    common AS (
+        SELECT c.new_id, c.old_id, COUNT(*) AS common
+        FROM cand c
+        JOIN sh x ON x.id = c.new_id
+        JOIN sh y ON y.id = c.old_id AND y.g = x.g
+        GROUP BY c.new_id, c.old_id
+    ),
+    dropped AS (
+        SELECT DISTINCT common.new_id
+        FROM common
+        JOIN sizes sa ON sa.id = common.new_id
+        JOIN sizes sb ON sb.id = common.old_id
+        WHERE common / (sa.n + sb.n - common) >= 0.5
+    )"""
+)
+
+# the quadratic truth: shingles shared by every pair
+_ALL_PAIRS_CTE = """
+    sizes AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
+    inter AS (
+        SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS common
+        FROM sh a JOIN sh b ON a.g = b.g AND a.id < b.id
+        GROUP BY a.id, b.id
+    )"""
+
+
+def _shared_shingles_cte(p: str = "") -> str:
+    """``{p}sizes`` (shingles per document) and ``{p}common`` (shingles each
+    ``cand`` pair shares)."""
+    return f"""
+    {p}sizes AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
+    {p}common AS (
+        SELECT c.id_a, c.id_b, COUNT(*) AS common
+        FROM cand c
+        JOIN sh a ON a.id = c.id_a
+        JOIN sh b ON b.id = c.id_b AND b.g = a.g
+        GROUP BY c.id_a, c.id_b
+    )"""
+
+
+def _jaccard_pairs_cte(name: str, src: str, sizes: str = "sizes", cols: str = "id_a, id_b") -> str:
+    """CTE ``name``: ``cols`` of the pairs of ``src`` (id_a, id_b, common)
+    whose shingle Jaccard is at least 0.5."""
+    return f"""
+    {name} AS (
+        SELECT {cols} FROM {src}
+        JOIN {sizes} sa ON sa.id = id_a
+        JOIN {sizes} sb ON sb.id = id_b
+        WHERE common / (sa.n + sb.n - common) >= 0.5
+    )"""
+
+
 @query(
     "dd_exact",
     oracle="""
@@ -52,13 +150,9 @@ def dd_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
     oracle="WITH "
     + _SHINGLES_CTE.format(where=" WHERE doc_id < 200")
-    + """,
-    sizes AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
-    inter AS (
-        SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS common
-        FROM sh a JOIN sh b ON a.g = b.g AND a.id < b.id
-        GROUP BY a.id, b.id
-    )
+    + ","
+    + _ALL_PAIRS_CTE
+    + """
     SELECT id_a, id_b, common, sa.n AS n_a, sb.n AS n_b
     FROM inter
     JOIN sizes sa ON sa.id = id_a
@@ -100,34 +194,10 @@ def dd_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dd_minhash_lsh",
     oracle="WITH "
-    + _SHINGLES_CTE.format(where="")
-    + f""",
-    sig AS (
-        SELECT id, {', '.join(_minhash_min(j) for j in range(8))}
-        FROM sh GROUP BY id
-    ),
-    bands AS (
-        SELECT id, 0 AS band, mh0 || '_' || mh1 AS key FROM sig
-        UNION ALL SELECT id, 1, mh2 || '_' || mh3 FROM sig
-        UNION ALL SELECT id, 2, mh4 || '_' || mh5 FROM sig
-        UNION ALL SELECT id, 3, mh6 || '_' || mh7 FROM sig
-    ),
-    bands_capped AS (
-        SELECT id, band, key FROM bands
-        QUALIFY COUNT(*) OVER (PARTITION BY band, key) <= 1000
-    ),
-    cand AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands_capped a JOIN bands_capped b ON a.band = b.band AND a.key = b.key AND a.id < b.id
-    ),
-    sizes AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
-    common AS (
-        SELECT c.id_a, c.id_b, COUNT(*) AS common
-        FROM cand c
-        JOIN sh a ON a.id = c.id_a
-        JOIN sh b ON b.id = c.id_b AND b.g = a.g
-        GROUP BY c.id_a, c.id_b
-    )
+    + _CAND_CTE
+    + ","
+    + _shared_shingles_cte()
+    + """
     SELECT id_a, id_b, common, sa.n AS n_a, sb.n AS n_b
     FROM common
     JOIN sizes sa ON sa.id = id_a
@@ -149,15 +219,16 @@ def _simhash_bit_sums_sql(bits: int = 32) -> str:
     return ", ".join(terms)
 
 
-def _simhash_cte(bits: int = 32) -> str:
+def _simhash_cte(bits: int = 32, weighted: bool = False) -> str:
     """words -> truncated-md5 word hash -> per-bit majority -> packed sig,
     parameterized by signature width (ceil(bits/4) hex chars of md5 — the
-    same rule operators.dedup.simhash applies)."""
+    same rule operators.dedup.simhash applies). ``weighted`` lets every
+    token vote, not only the distinct words."""
     hexchars = (bits + 3) // 4
     return (
         f"""
     words AS (
-        SELECT DISTINCT doc_id AS id, w
+        SELECT {"" if weighted else "DISTINCT "}doc_id AS id, w
         FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
         WHERE w != ''
     ),
@@ -176,6 +247,27 @@ def _simhash_cte(bits: int = 32) -> str:
 
 
 _SIMHASH_CTE = _simhash_cte(32)
+
+
+def _simhash_band_pairs_sql(key: str, extra: str = "") -> str:
+    """Pigeonhole banding of ``sig``: 4 bands keyed by ``key`` (an expression
+    of ``simhash`` and ``t.band``), buckets capped at 10000, then the pairs
+    within hamming 3."""
+    return f"""
+    bands AS (
+        SELECT id, simhash, t.band, {key} AS key
+        FROM sig, UNNEST([0, 1, 2, 3]) AS t(band)
+    ),
+    bounded AS (
+        SELECT * FROM bands
+        QUALIFY COUNT(*) OVER (PARTITION BY band, key) <= 10000
+    )
+    SELECT DISTINCT a.id AS id_a, b.id AS id_b,
+           bit_count(xor(a.simhash, b.simhash)) AS hamming{extra}
+    FROM bounded a JOIN bounded b
+      ON a.band = b.band AND a.key = b.key AND a.id < b.id
+    WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
+    """
 
 
 @query(
@@ -212,21 +304,8 @@ def dd_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dd_simhash_banded",
     oracle="WITH "
     + _SIMHASH_CTE
-    + """,
-    bands AS (
-        SELECT id, simhash, t.band, (simhash >> (t.band * 8)) & 255 AS key
-        FROM sig, UNNEST([0, 1, 2, 3]) AS t(band)
-    ),
-    bounded AS (
-        SELECT * FROM bands
-        QUALIFY COUNT(*) OVER (PARTITION BY band, key) <= 10000
-    )
-    SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-           bit_count(xor(a.simhash, b.simhash)) AS hamming
-    FROM bounded a JOIN bounded b
-      ON a.band = b.band AND a.key = b.key AND a.id < b.id
-    WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-    """,
+    + ","
+    + _simhash_band_pairs_sql("(simhash >> (t.band * 8)) & 255"),
 )
 def dd_simhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash SCALE path: pigeonhole banding (4 bands of 8 bits; any pair
@@ -254,24 +333,13 @@ def dd_simhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT LEAST(15, GREATEST(4,
                CAST(CEIL(LOG2(COUNT(*) / 64.0)) AS INT))) AS bb
         FROM documents
+    ),"""
+    + _simhash_band_pairs_sql(
+        """(simhash >> (t.band * (SELECT bb FROM p)))
+               & (CAST(POW(2, (SELECT bb FROM p)) AS BIGINT) - 1)""",
+        """,
+           (SELECT bb FROM p) AS band_bits""",
     ),
-    bands AS (
-        SELECT id, simhash, t.band,
-               (simhash >> (t.band * (SELECT bb FROM p)))
-               & (CAST(POW(2, (SELECT bb FROM p)) AS BIGINT) - 1) AS key
-        FROM sig, UNNEST([0, 1, 2, 3]) AS t(band)
-    ),
-    bounded AS (
-        SELECT * FROM bands
-        QUALIFY COUNT(*) OVER (PARTITION BY band, key) <= 10000
-    )
-    SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-           bit_count(xor(a.simhash, b.simhash)) AS hamming,
-           (SELECT bb FROM p) AS band_bits
-    FROM bounded a JOIN bounded b
-      ON a.band = b.band AND a.key = b.key AND a.id < b.id
-    WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-    """,
 )
 def dd_simhash_banded_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded SimHash at the OCCUPANCY-DERIVED band width — the dedup twin
@@ -427,31 +495,10 @@ def dd_incremental_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.incremental_exact_dedup(batch, existing).select("doc_id")
 
 
-_SIMHASH_WEIGHTED_CTE = (
-    """
-    words AS (
-        SELECT doc_id AS id, w
-        FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
-        WHERE w != ''
-    ),
-    hashed AS (
-        SELECT id, CAST('0x' || substring(md5(w), 1, 8) AS BIGINT) AS h FROM words
-    ),
-    sums AS (SELECT id, """
-    + _simhash_bit_sums_sql()
-    + """ FROM hashed GROUP BY id),
-    sig AS (
-        SELECT id, """
-    + " + ".join(f"(CASE WHEN s{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(32))
-    + """ AS simhash FROM sums
-    )"""
-)
-
-
 @query(
     "dd_simhash_weighted",
     bench=False,
-    oracle="WITH " + _SIMHASH_WEIGHTED_CTE + " SELECT id AS doc_id, simhash FROM sig",
+    oracle="WITH " + _simhash_cte(weighted=True) + " SELECT id AS doc_id, simhash FROM sig",
 )
 def dd_simhash_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-weighted SimHash (every token votes, not distinct types) —
@@ -520,41 +567,11 @@ def dd_repeated_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dd_incremental_minhash",
     oracle="WITH "
     + _SHINGLES_CTE.format(where="")
-    + f""",
-    sig AS (
-        SELECT id, {', '.join(_minhash_min(j) for j in range(8))}
-        FROM sh GROUP BY id
-    ),
-    bands AS (
-        SELECT id, 0 AS band, mh0 || '_' || mh1 AS key FROM sig
-        UNION ALL SELECT id, 1, mh2 || '_' || mh3 FROM sig
-        UNION ALL SELECT id, 2, mh4 || '_' || mh5 FROM sig
-        UNION ALL SELECT id, 3, mh6 || '_' || mh7 FROM sig
-    ),
-    bands_capped AS (
-        SELECT id, band, key FROM bands
-        QUALIFY COUNT(*) OVER (PARTITION BY band, key) <= 1000
-    ),
-    cand AS (
-        SELECT DISTINCT b.id AS new_id, a.id AS old_id
-        FROM bands_capped a JOIN bands_capped b ON a.band = b.band AND a.key = b.key
-        WHERE a.id < 250 AND b.id >= 250
-    ),
-    sizes AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
-    common AS (
-        SELECT c.new_id, c.old_id, COUNT(*) AS common
-        FROM cand c
-        JOIN sh x ON x.id = c.new_id
-        JOIN sh y ON y.id = c.old_id AND y.g = x.g
-        GROUP BY c.new_id, c.old_id
-    ),
-    dropped AS (
-        SELECT DISTINCT common.new_id
-        FROM common
-        JOIN sizes sa ON sa.id = common.new_id
-        JOIN sizes sb ON sb.id = common.old_id
-        WHERE common / (sa.n + sb.n - common) >= 0.5
-    )
+    + ","
+    + _MINHASH_SIG_CTE
+    + ","
+    + _INCREMENTAL_DROPPED_CTE
+    + """
     SELECT doc_id FROM documents
     WHERE doc_id >= 250 AND doc_id NOT IN (SELECT new_id FROM dropped)
     """,
@@ -614,41 +631,7 @@ def dd_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _MINHASH_EDGES_CTES = (
-    _SHINGLES_CTE.format(where="")
-    + f""",
-    sig AS (
-        SELECT id, {', '.join(_minhash_min(j) for j in range(8))}
-        FROM sh GROUP BY id
-    ),
-    bands AS (
-        SELECT id, 0 AS band, mh0 || '_' || mh1 AS key FROM sig
-        UNION ALL SELECT id, 1, mh2 || '_' || mh3 FROM sig
-        UNION ALL SELECT id, 2, mh4 || '_' || mh5 FROM sig
-        UNION ALL SELECT id, 3, mh6 || '_' || mh7 FROM sig
-    ),
-    bands_capped AS (
-        SELECT id, band, key FROM bands
-        QUALIFY COUNT(*) OVER (PARTITION BY band, key) <= 1000
-    ),
-    cand AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands_capped a JOIN bands_capped b ON a.band = b.band AND a.key = b.key AND a.id < b.id
-    ),
-    sizes AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
-    common AS (
-        SELECT c.id_a, c.id_b, COUNT(*) AS common
-        FROM cand c
-        JOIN sh a ON a.id = c.id_a
-        JOIN sh b ON b.id = c.id_b AND b.g = a.g
-        GROUP BY c.id_a, c.id_b
-    ),
-    verified AS (
-        SELECT id_a, id_b
-        FROM common
-        JOIN sizes sa ON sa.id = id_a
-        JOIN sizes sb ON sb.id = id_b
-        WHERE common / (sa.n + sb.n - common) >= 0.5
-    )"""
+    _CAND_CTE + "," + _shared_shingles_cte() + "," + _jaccard_pairs_cte("verified", "common")
 )
 
 
@@ -784,7 +767,11 @@ def dd_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dd_containment_lsh",
     oracle="WITH "
-    + _MINHASH_EDGES_CTES.replace("verified AS", "jacc_unused AS")
+    + _CAND_CTE
+    + ","
+    + _shared_shingles_cte()
+    + ","
+    + _jaccard_pairs_cte("jacc_unused", "common")
     + """,
     directed AS (
         SELECT id_a, id_b, common FROM common
@@ -905,38 +892,15 @@ def dd_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
     oracle="WITH "
     + _SHINGLES_CTE.format(where="")
-    + f""",
-    sizes AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
-    inter AS (
-        SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS common
-        FROM sh a JOIN sh b ON a.g = b.g AND a.id < b.id
-        GROUP BY a.id, b.id
-    ),
-    truth AS (
-        SELECT id_a, id_b FROM inter
-        JOIN sizes sa ON sa.id = id_a
-        JOIN sizes sb ON sb.id = id_b
-        WHERE common / (sa.n + sb.n - common) >= 0.5
-    ),
-    sig AS (
-        SELECT id, {', '.join(_minhash_min(j) for j in range(8))}
-        FROM sh GROUP BY id
-    ),
-    bands AS (
-        SELECT id, 0 AS band, mh0 || '_' || mh1 AS key FROM sig
-        UNION ALL SELECT id, 1, mh2 || '_' || mh3 FROM sig
-        UNION ALL SELECT id, 2, mh4 || '_' || mh5 FROM sig
-        UNION ALL SELECT id, 3, mh6 || '_' || mh7 FROM sig
-    ),
-    bands_capped AS (
-        SELECT id, band, key FROM bands
-        QUALIFY COUNT(*) OVER (PARTITION BY band, key) <= 1000
-    ),
-    cand AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands_capped a
-        JOIN bands_capped b ON a.band = b.band AND a.key = b.key AND a.id < b.id
-    ),
+    + ","
+    + _ALL_PAIRS_CTE
+    + ","
+    + _jaccard_pairs_cte("truth", "inter")
+    + ","
+    + _MINHASH_SIG_CTE
+    + ","
+    + _MINHASH_CAND_CTE
+    + """,
     hit AS (SELECT t.id_a, t.id_b FROM truth t JOIN cand c
             ON c.id_a = t.id_a AND c.id_b = t.id_b)
     SELECT CAST((SELECT COUNT(*) FROM truth) AS BIGINT) AS n_true,
@@ -974,41 +938,12 @@ def dd_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dd_group_split",
     oracle="WITH RECURSIVE "
-    + _SHINGLES_CTE.format(where="").lstrip()
-    + f""",
-    sig AS (
-        SELECT id, {', '.join(_minhash_min(j) for j in range(8))}
-        FROM sh GROUP BY id
-    ),
-    bands AS (
-        SELECT id, 0 AS band, mh0 || '_' || mh1 AS key FROM sig
-        UNION ALL SELECT id, 1, mh2 || '_' || mh3 FROM sig
-        UNION ALL SELECT id, 2, mh4 || '_' || mh5 FROM sig
-        UNION ALL SELECT id, 3, mh6 || '_' || mh7 FROM sig
-    ),
-    bands_capped AS (
-        SELECT id, band, key FROM bands
-        QUALIFY COUNT(*) OVER (PARTITION BY band, key) <= 1000
-    ),
-    cand AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands_capped a
-        JOIN bands_capped b ON a.band = b.band AND a.key = b.key AND a.id < b.id
-    ),
-    sizes AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
-    common AS (
-        SELECT c.id_a, c.id_b, COUNT(*) AS common
-        FROM cand c
-        JOIN sh a ON a.id = c.id_a
-        JOIN sh b ON b.id = c.id_b AND b.g = a.g
-        GROUP BY c.id_a, c.id_b
-    ),
-    dup_pairs AS (
-        SELECT id_a, id_b FROM common
-        JOIN sizes sa ON sa.id = id_a
-        JOIN sizes sb ON sb.id = id_b
-        WHERE common / (sa.n + sb.n - common) >= 0.5
-    ),
+    + _CAND_CTE
+    + ","
+    + _shared_shingles_cte()
+    + ","
+    + _jaccard_pairs_cte("dup_pairs", "common")
+    + """,
     sym AS (SELECT id_a AS src, id_b AS dst FROM dup_pairs
             UNION SELECT id_b, id_a FROM dup_pairs),
     cc(id, label) AS (
@@ -1097,16 +1032,12 @@ def dd_boundary_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "dd_prefix_jaccard",
-    oracle="WITH "
-    + _SHINGLES_CTE.format(where="")
-    + """,
-    shh AS (
-        SELECT DISTINCT id,
-               CAST('0x' || substring(md5(g), 1, 15) AS BIGINT) AS gh
-        FROM sh
-    ),
+def _prefix_jaccard_sql(num: int, den: int) -> str:
+    """Prefix-filtered self-join of ``shh`` (id, gh: the distinct hashed
+    grams of each set) at Jaccard threshold t = num/den: df-ordered prefix,
+    size and positional filters, exact overlap, then the pairs at
+    Jaccard >= t."""
+    return f"""
     dftab AS (SELECT gh, COUNT(*) AS df FROM shh GROUP BY gh),
     sized AS (
         SELECT id, gh,
@@ -1115,14 +1046,14 @@ def dd_boundary_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM shh JOIN dftab USING (gh)
     ),
     prefix AS (
-        SELECT id, gh, sz, rn FROM sized WHERE rn <= sz - (3 * sz + 4) // 5 + 1
+        SELECT id, gh, sz, rn FROM sized WHERE rn <= sz - ({num} * sz + {den - 1}) // {den} + 1
     ),
     cand AS (
         SELECT DISTINCT a.id AS id_a, b.id AS id_b
         FROM prefix a JOIN prefix b ON a.gh = b.gh AND a.id < b.id
-        WHERE 5 * b.sz >= 3 * a.sz AND 5 * a.sz >= 3 * b.sz
+        WHERE {den} * b.sz >= {num} * a.sz AND {den} * a.sz >= {num} * b.sz
           AND 1 + LEAST(a.sz - a.rn, b.sz - b.rn)
-              >= (3 * (a.sz + b.sz) + 7) // 8
+              >= ({num} * (a.sz + b.sz) + {num + den - 1}) // {num + den}
     ),
     inter AS (
         SELECT c.id_a, c.id_b, COUNT(*) AS n_inter
@@ -1138,8 +1069,21 @@ def dd_boundary_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM inter i
     JOIN szs sa ON sa.id = i.id_a
     JOIN szs sb ON sb.id = i.id_b
-    WHERE ROUND(CAST(n_inter AS DOUBLE) / (sa.sz + sb.sz - n_inter), 6) >= 0.6
-    """,
+    WHERE ROUND(CAST(n_inter AS DOUBLE) / (sa.sz + sb.sz - n_inter), 6) >= {num / den}
+    """
+
+
+@query(
+    "dd_prefix_jaccard",
+    oracle="WITH "
+    + _SHINGLES_CTE.format(where="")
+    + """,
+    shh AS (
+        SELECT DISTINCT id,
+               CAST('0x' || substring(md5(g), 1, 15) AS BIGINT) AS gh
+        FROM sh
+    ),"""
+    + _prefix_jaccard_sql(3, 5),
 )
 def dd_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-word-shingle Jaccard >= 0.6 self-join by prefix filtering
@@ -1304,36 +1248,10 @@ def dd_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dd_minhash_estimate",
     oracle="WITH "
-    + _SHINGLES_CTE.format(where="")
-    + f""",
-    sig AS (
-        SELECT id, {', '.join(_minhash_min(j) for j in range(8))}
-        FROM sh GROUP BY id
-    ),
-    bands AS (
-        SELECT id, 0 AS band, mh0 || '_' || mh1 AS key FROM sig
-        UNION ALL SELECT id, 1, mh2 || '_' || mh3 FROM sig
-        UNION ALL SELECT id, 2, mh4 || '_' || mh5 FROM sig
-        UNION ALL SELECT id, 3, mh6 || '_' || mh7 FROM sig
-    ),
-    bands_capped AS (
-        SELECT id, band, key FROM bands
-        QUALIFY COUNT(*) OVER (PARTITION BY band, key) <= 1000
-    ),
-    cand AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands_capped a
-        JOIN bands_capped b ON a.band = b.band AND a.key = b.key
-                           AND a.id < b.id
-    ),
-    sizes AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
-    common AS (
-        SELECT c.id_a, c.id_b, COUNT(*) AS common
-        FROM cand c
-        JOIN sh a ON a.id = c.id_a
-        JOIN sh b ON b.id = c.id_b AND b.g = a.g
-        GROUP BY c.id_a, c.id_b
-    ),
+    + _CAND_CTE
+    + ","
+    + _shared_shingles_cte()
+    + """,
     agree AS (
         SELECT c.id_a, c.id_b,
                ((CASE WHEN x.mh0 = y.mh0 THEN 1 ELSE 0 END)
@@ -1442,23 +1360,13 @@ def _band_cfg_sql(bands: int, rows: int) -> str:
     "dd_band_curve",
     oracle="WITH "
     + _SHINGLES_CTE.format(where="")
+    + ","
+    + _ALL_PAIRS_CTE
+    + ","
+    + _jaccard_pairs_cte("truth", "inter")
+    + ","
+    + _MINHASH_SIG_CTE
     + f""",
-    sizes AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
-    inter AS (
-        SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS common
-        FROM sh a JOIN sh b ON a.g = b.g AND a.id < b.id
-        GROUP BY a.id, b.id
-    ),
-    truth AS (
-        SELECT id_a, id_b FROM inter
-        JOIN sizes sa ON sa.id = id_a
-        JOIN sizes sb ON sb.id = id_b
-        WHERE common / (sa.n + sb.n - common) >= 0.5
-    ),
-    sig AS (
-        SELECT id, {', '.join(_minhash_min(j) for j in range(8))}
-        FROM sh GROUP BY id
-    ),
     bands AS (
         {_band_cfg_sql(8, 1)}
         UNION ALL {_band_cfg_sql(4, 2)}
@@ -1547,32 +1455,6 @@ def dd_band_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CAND_CTE = (
-    _SHINGLES_CTE.format(where="")
-    + f""",
-    sig AS (
-        SELECT id, {', '.join(_minhash_min(j) for j in range(8))}
-        FROM sh GROUP BY id
-    ),
-    bands AS (
-        SELECT id, 0 AS band, mh0 || '_' || mh1 AS key FROM sig
-        UNION ALL SELECT id, 1, mh2 || '_' || mh3 FROM sig
-        UNION ALL SELECT id, 2, mh4 || '_' || mh5 FROM sig
-        UNION ALL SELECT id, 3, mh6 || '_' || mh7 FROM sig
-    ),
-    bands_capped AS (
-        SELECT id, band, key FROM bands
-        QUALIFY COUNT(*) OVER (PARTITION BY band, key) <= 1000
-    ),
-    cand AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands_capped a
-        JOIN bands_capped b
-            ON a.band = b.band AND a.key = b.key AND a.id < b.id
-    )"""
-)
-
-
 @query(
     "dd_bleu_pairs",
     oracle="WITH "
@@ -1658,21 +1540,11 @@ for _a, _b in [("words", "zwords"), ("hashed", "zhashed"),
     + _CAND_CTE
     + ","
     + _SIMHASH_NS
+    + ","
+    + _shared_shingles_cte("m")
+    + ","
+    + _jaccard_pairs_cte("mh_pairs", "mcommon", "msizes")
     + """,
-    msizes AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
-    mcommon AS (
-        SELECT c.id_a, c.id_b, COUNT(*) AS common
-        FROM cand c
-        JOIN sh a ON a.id = c.id_a
-        JOIN sh b ON b.id = c.id_b AND b.g = a.g
-        GROUP BY c.id_a, c.id_b
-    ),
-    mh_pairs AS (
-        SELECT id_a, id_b FROM mcommon
-        JOIN msizes sa ON sa.id = id_a
-        JOIN msizes sb ON sb.id = id_b
-        WHERE common / (sa.n + sb.n - common) >= 0.5
-    ),
     sh_bands AS (
         SELECT id, simhash, t.band, (simhash >> (t.band * 8)) & 255 AS key
         FROM zsig, UNNEST([0, 1, 2, 3]) AS t(band)

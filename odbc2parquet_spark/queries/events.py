@@ -49,10 +49,10 @@ def ev_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "ev_sessionized",
-    oracle="""
-    WITH ordered AS (
+# shared oracle CTEs: each event's session number per user (a gap over
+# 10 minutes starts a new session)
+_SESSIONS_CTE = """
+    ordered AS (
         SELECT user_id, ts,
                epoch_us(ts) - epoch_us(LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)) AS gap_us
         FROM events
@@ -67,7 +67,14 @@ def ev_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
                                       ROWS UNBOUNDED PRECEDING) AS session_no
         FROM flagged
-    )
+    )"""
+
+
+@query(
+    "ev_sessionized",
+    oracle="WITH "
+    + _SESSIONS_CTE
+    + """
     SELECT user_id,
            epoch_us(MIN(ts)) // 1000000 AS session_start,
            (epoch_us(MAX(ts)) + 600000000) // 1000000 AS session_end,
@@ -90,9 +97,10 @@ def ev_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "ev_asof_last_purchase",
-    oracle="""
+def _asof_purchase_sql(cond: str) -> str:
+    """Each click matched as-of to a purchase of the same user, ``cond``
+    ordering the two timestamps."""
+    return f"""
     WITH clicks AS (
         SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'
     ),
@@ -107,8 +115,13 @@ def ev_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
            epoch_us(p.ts) AS r_ts_us,
            p.purchase_value AS r_purchase_value
     FROM clicks c ASOF LEFT JOIN purchases p
-      ON c.user_id = p.user_id AND c.ts >= p.ts
-    """,
+      ON c.user_id = p.user_id AND {cond}
+    """
+
+
+@query(
+    "ev_asof_last_purchase",
+    oracle=_asof_purchase_sql("c.ts >= p.ts"),
 )
 def ev_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: each click + the user's most recent purchase at or
@@ -462,25 +475,9 @@ def ev_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ev_peak_concurrency",
-    oracle="""
-    WITH ordered AS (
-        SELECT user_id, ts,
-               epoch_us(ts) - epoch_us(LAG(ts) OVER (PARTITION BY user_id
-                                                     ORDER BY ts)) AS gap_us
-        FROM events
-    ),
-    flagged AS (
-        SELECT user_id, ts,
-               CASE WHEN gap_us IS NULL OR gap_us > 600000000
-                    THEN 1 ELSE 0 END AS new_session
-        FROM ordered
-    ),
-    numbered AS (
-        SELECT user_id, ts,
-               SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                      ROWS UNBOUNDED PRECEDING) AS session_no
-        FROM flagged
-    ),
+    oracle="WITH "
+    + _SESSIONS_CTE
+    + """,
     sess AS (
         SELECT epoch_us(MIN(ts)) // 1000000 AS session_start,
                (epoch_us(MAX(ts)) + 600000000) // 1000000 AS session_end
@@ -670,10 +667,10 @@ def ev_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "ev_time_to_convert",
-    oracle="""
-    WITH su AS (
+# shared oracle CTEs: the signup -> first purchase life table (subjects
+# censored at the last event), with the subjects at risk per day
+_SURVIVAL_CTE = """
+    su AS (
         SELECT user_id, MIN(ts) AS signup_ts
         FROM events WHERE event_type = 'signup' GROUP BY 1
     ),
@@ -702,7 +699,14 @@ def ev_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                         UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_prior,
                SUM(n_all) OVER () AS n_total
         FROM per_t
-    )
+    )"""
+
+
+@query(
+    "ev_time_to_convert",
+    oracle="WITH "
+    + _SURVIVAL_CTE
+    + """
     SELECT CAST(t AS BIGINT) AS t_days,
            CAST(n_total - n_prior AS BIGINT) AS n_risk,
            CAST(n_events AS BIGINT) AS n_events,
@@ -945,11 +949,12 @@ def ev_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return seq.groupBy("event_type", "next_type").agg(F.count("*").alias("n"))
 
 
-@query(
-    "ev_resample_daily",
-    bench=False,
-    oracle="""
-    WITH ev AS (
+def _last_per_bucket_cte(last: str) -> str:
+    """``ev`` (events keyed by user and day), ``grid`` (every day from each
+    user's first to last) and ``per_bucket`` (each observed user-day's
+    last value, as ``last``)."""
+    return f"""
+    ev AS (
         SELECT user_id AS key, epoch_us(ts) AS ts_us, event_id AS id, value AS v,
                CAST(FLOOR(epoch_us(ts) / 86400000000) AS BIGINT) AS bucket
         FROM events
@@ -960,13 +965,21 @@ def ev_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM bounds, UNNEST(generate_series(b0, b1)) AS t(b)
     ),
     per_bucket AS (
-        SELECT key, bucket, v AS bucket_last FROM (
+        SELECT key, bucket, v AS {last} FROM (
             SELECT key, bucket, v,
                    ROW_NUMBER() OVER (PARTITION BY key, bucket
                                       ORDER BY ts_us DESC, id DESC) AS rn
             FROM ev
         ) WHERE rn = 1
-    )
+    )"""
+
+
+@query(
+    "ev_resample_daily",
+    bench=False,
+    oracle="WITH "
+    + _last_per_bucket_cte("bucket_last")
+    + """
     SELECT g.key AS user_id, g.bucket,
            LAST_VALUE(p.bucket_last IGNORE NULLS) OVER (
                PARTITION BY g.key ORDER BY g.bucket
@@ -1027,23 +1040,7 @@ def ev_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ev_asof_next_purchase",
     bench=False,
-    oracle="""
-    WITH clicks AS (
-        SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'
-    ),
-    purchases AS (
-        SELECT user_id, ts, MAX(value) AS purchase_value
-        FROM events WHERE event_type = 'purchase'
-        GROUP BY user_id, ts
-    )
-    SELECT c.event_id,
-           c.user_id,
-           epoch_us(c.ts) AS ts_us,
-           epoch_us(p.ts) AS r_ts_us,
-           p.purchase_value AS r_purchase_value
-    FROM clicks c ASOF LEFT JOIN purchases p
-      ON c.user_id = p.user_id AND c.ts <= p.ts
-    """,
+    oracle=_asof_purchase_sql("c.ts <= p.ts"),
 )
 def ev_asof_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FORWARD as-of join: each click + the user's NEXT purchase at or
@@ -1404,25 +1401,9 @@ def ev_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ev_resample_interp",
-    oracle="""
-    WITH ev AS (
-        SELECT user_id AS key, epoch_us(ts) AS ts_us, event_id AS id, value AS v,
-               CAST(FLOOR(epoch_us(ts) / 86400000000) AS BIGINT) AS bucket
-        FROM events
-    ),
-    bounds AS (SELECT key, MIN(bucket) AS b0, MAX(bucket) AS b1 FROM ev GROUP BY key),
-    grid AS (
-        SELECT key, CAST(t.b AS BIGINT) AS bucket
-        FROM bounds, UNNEST(generate_series(b0, b1)) AS t(b)
-    ),
-    per_bucket AS (
-        SELECT key, bucket, v AS obs_v FROM (
-            SELECT key, bucket, v,
-                   ROW_NUMBER() OVER (PARTITION BY key, bucket
-                                      ORDER BY ts_us DESC, id DESC) AS rn
-            FROM ev
-        ) WHERE rn = 1
-    ),
+    oracle="WITH "
+    + _last_per_bucket_cte("obs_v")
+    + """,
     g AS (
         SELECT grid.key, grid.bucket, p.obs_v,
                p.obs_v IS NOT NULL AS observed
@@ -1551,40 +1532,54 @@ def ev_ewma_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "ev_hll_daily_users",
-    oracle="""
-    WITH h AS (
-        SELECT CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day,
+def _hll_regs_cte(unit: str, bucket: str) -> str:
+    """``h`` (each event's user hash, in ``unit`` number ``bucket``) and
+    ``regs`` (the 256 HyperLogLog registers per ``unit``)."""
+    return f"""
+    h AS (
+        SELECT {bucket} AS {unit},
                CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15)
                     AS BIGINT) AS h
         FROM events
     ),
     regs AS (
-        SELECT day, h & 255 AS reg,
+        SELECT {unit}, h & 255 AS reg,
                MAX(CASE WHEN (h >> 8) = 0 THEN 53
                         ELSE 53 - length(bin(h >> 8)) END) AS mrho
-        FROM h GROUP BY day, h & 255
-    ),
+        FROM h GROUP BY {unit}, h & 255
+    )"""
+
+
+def _hll_estimate_sql(unit: str, regs: str) -> str:
+    """The HyperLogLog estimate per ``unit`` from the registers in ``regs``."""
+    return f"""
     g AS (
-        SELECT day, COUNT(*) AS touched,
+        SELECT {unit}, COUNT(*) AS touched,
                SUM(CAST(CAST(1 AS BIGINT) << (61 - mrho) AS DECIMAL(38,0)))
                    AS z_touched
-        FROM regs GROUP BY day
+        FROM {regs} GROUP BY {unit}
     ),
     e AS (
-        SELECT day, 256 - touched AS v,
+        SELECT {unit}, 256 - touched AS v,
                1.0854228543761655e+23
                / CAST(z_touched + CAST(256 - touched AS DECIMAL(38,0))
                       * CAST(2305843009213693952 AS DECIMAL(38,0)) AS DOUBLE)
                    AS raw
         FROM g
     )
-    SELECT day, 256 AS m, CAST(v AS BIGINT) AS zero_regs,
+    SELECT {unit}, 256 AS m, CAST(v AS BIGINT) AS zero_regs,
            ROUND(CASE WHEN raw <= 640.0 AND v > 0
                       THEN 256.0 * ln(256.0 / v) ELSE raw END, 2) AS estimate
     FROM e
-    """,
+    """
+
+
+_DAY = "CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)"
+
+
+@query(
+    "ev_hll_daily_users",
+    oracle="WITH " + _hll_regs_cte("day", _DAY) + "," + _hll_estimate_sql("day", "regs"),
 )
 def ev_hll_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct users per day via per-group HyperLogLog registers
@@ -1639,38 +1634,10 @@ def ev_purged_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ev_hll_weekly_users",
-    oracle="""
-    WITH h AS (
-        SELECT CAST(FLOOR(FLOOR(epoch(ts) / 86400) / 7) AS BIGINT) AS week,
-               CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15)
-                    AS BIGINT) AS h
-        FROM events
-    ),
-    regs AS (
-        SELECT week, h & 255 AS reg,
-               MAX(CASE WHEN (h >> 8) = 0 THEN 53
-                        ELSE 53 - length(bin(h >> 8)) END) AS mrho
-        FROM h GROUP BY week, h & 255
-    ),
-    g AS (
-        SELECT week, COUNT(*) AS touched,
-               SUM(CAST(CAST(1 AS BIGINT) << (61 - mrho) AS DECIMAL(38,0)))
-                   AS z_touched
-        FROM regs GROUP BY week
-    ),
-    e AS (
-        SELECT week, 256 - touched AS v,
-               1.0854228543761655e+23
-               / CAST(z_touched + CAST(256 - touched AS DECIMAL(38,0))
-                      * CAST(2305843009213693952 AS DECIMAL(38,0)) AS DOUBLE)
-                   AS raw
-        FROM g
-    )
-    SELECT week, 256 AS m, CAST(v AS BIGINT) AS zero_regs,
-           ROUND(CASE WHEN raw <= 640.0 AND v > 0
-                      THEN 256.0 * ln(256.0 / v) ELSE raw END, 2) AS estimate
-    FROM e
-    """,
+    oracle="WITH "
+    + _hll_regs_cte("week", "CAST(FLOOR(FLOOR(epoch(ts) / 86400) / 7) AS BIGINT)")
+    + ","
+    + _hll_estimate_sql("week", "regs"),
 )
 def ev_hll_weekly_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly distinct users by MERGING the daily HLL register rows
@@ -1699,19 +1666,9 @@ def ev_hll_weekly_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ev_hll_cumulative",
-    oracle="""
-    WITH h AS (
-        SELECT CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day,
-               CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15)
-                    AS BIGINT) AS h
-        FROM events
-    ),
-    regs AS (
-        SELECT day, h & 255 AS reg,
-               MAX(CASE WHEN (h >> 8) = 0 THEN 53
-                        ELSE 53 - length(bin(h >> 8)) END) AS mrho
-        FROM h GROUP BY day, h & 255
-    ),
+    oracle="WITH "
+    + _hll_regs_cte("day", _DAY)
+    + """,
     grid AS (
         SELECT d.day, r.range AS reg
         FROM (SELECT DISTINCT day FROM regs) d CROSS JOIN range(256) r
@@ -1723,26 +1680,8 @@ def ev_hll_weekly_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM grid LEFT JOIN regs
           ON regs.day = grid.day AND regs.reg = grid.reg
     ),
-    run AS (SELECT day, reg, mrho FROM run0 WHERE mrho IS NOT NULL),
-    g AS (
-        SELECT day, COUNT(*) AS touched,
-               SUM(CAST(CAST(1 AS BIGINT) << (61 - mrho) AS DECIMAL(38,0)))
-                   AS z_touched
-        FROM run GROUP BY day
-    ),
-    e AS (
-        SELECT day, 256 - touched AS v,
-               1.0854228543761655e+23
-               / CAST(z_touched + CAST(256 - touched AS DECIMAL(38,0))
-                      * CAST(2305843009213693952 AS DECIMAL(38,0)) AS DOUBLE)
-                   AS raw
-        FROM g
-    )
-    SELECT day, 256 AS m, CAST(v AS BIGINT) AS zero_regs,
-           ROUND(CASE WHEN raw <= 640.0 AND v > 0
-                      THEN 256.0 * ln(256.0 / v) ELSE raw END, 2) AS estimate
-    FROM e
-    """,
+    run AS (SELECT day, reg, mrho FROM run0 WHERE mrho IS NOT NULL),"""
+    + _hll_estimate_sql("day", "run"),
 )
 def ev_hll_cumulative(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct users TO DATE per day — the running-COUNT(DISTINCT) that
@@ -1820,10 +1759,9 @@ def ev_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "ev_holt_forecast",
-    oracle="""
-    WITH RECURSIVE ev AS (
+# shared oracle CTEs: each event type's daily mean value, numbered by day
+_DAILY_SERIES_CTE = """
+    ev AS (
         SELECT event_type, CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day,
                CAST(value AS DECIMAL(18,6)) AS vd
         FROM events
@@ -1837,7 +1775,14 @@ def ev_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT event_type, day, x,
                ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS i
         FROM daily
-    ),
+    )"""
+
+
+@query(
+    "ev_holt_forecast",
+    oracle="WITH RECURSIVE "
+    + _DAILY_SERIES_CTE
+    + """,
     rec(event_type, i, l, b) AS (
         SELECT event_type, i, CAST(x AS DOUBLE), CAST(0.0 AS DOUBLE)
         FROM seqd WHERE i = 1
@@ -2136,37 +2081,9 @@ def ev_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ev_km_survival",
-    oracle="""
-    WITH su AS (
-        SELECT user_id, MIN(ts) AS signup_ts
-        FROM events WHERE event_type = 'signup' GROUP BY 1
-    ),
-    fp AS (
-        SELECT su.user_id, su.signup_ts, MIN(e.ts) AS conv_ts
-        FROM su LEFT JOIN events e
-          ON e.user_id = su.user_id AND e.event_type = 'purchase'
-         AND e.ts >= su.signup_ts
-        GROUP BY 1, 2
-    ),
-    mx AS (SELECT MAX(ts) AS max_ts FROM events),
-    subj AS (
-        SELECT date_diff('day', CAST(signup_ts AS DATE),
-                         CAST(COALESCE(conv_ts, max_ts) AS DATE)) AS t_obs,
-               conv_ts IS NOT NULL AS converted
-        FROM fp, mx
-    ),
-    per_t AS (
-        SELECT t_obs AS t, COUNT(*) AS n_all,
-               SUM(CASE WHEN converted THEN 1 ELSE 0 END) AS n_events
-        FROM subj GROUP BY 1
-    ),
-    cum AS (
-        SELECT t, n_all, n_events,
-               COALESCE(SUM(n_all) OVER (ORDER BY t ROWS BETWEEN
-                        UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_prior,
-               SUM(n_all) OVER () AS n_total
-        FROM per_t
-    ),
+    oracle="WITH "
+    + _SURVIVAL_CTE
+    + """,
     lt AS (
         SELECT t, n_total - n_prior AS n_risk, n_events
         FROM cum WHERE n_events > 0
@@ -2398,25 +2315,10 @@ def ev_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _markov_iter_sql(i: int) -> str:
-    prev = f"p{i - 1}"
-    return f"""
-    p{i} AS (
-        SELECT sw.removed, sw.src AS state,
-               CAST(SUM(sw.w * (CASE WHEN sw.dst = 'conv' THEN 1000000000000
-                                     WHEN sw.dst = 'null' THEN 0
-                                     ELSE COALESCE(q.p, 0) END)
-                        // 1000000) AS BIGINT) AS p
-        FROM sw LEFT JOIN {prev} q
-            ON q.removed = sw.removed AND q.state = sw.dst
-        GROUP BY 1, 2
-    )"""
-
-
-@query(
-    "ev_removal_effect",
-    oracle=f"""
-    WITH ev AS (
+# shared oracle CTEs: conversion journeys (each purchase closes one) and
+# the first-order transition counts between their states
+_JOURNEY_TRANS_CTE = """
+    ev AS (
         SELECT user_id AS u, ts, event_id AS eid, event_type AS et
         FROM events
         WHERE event_type IN ('click', 'view', 'signup', 'purchase')
@@ -2455,7 +2357,29 @@ def _markov_iter_sql(i: int) -> str:
         )
     ),
     trans AS (SELECT src, dst, COUNT(*) AS cnt FROM alltr GROUP BY 1, 2),
-    o AS (SELECT src, SUM(cnt) AS out_n FROM trans GROUP BY 1),
+    o AS (SELECT src, SUM(cnt) AS out_n FROM trans GROUP BY 1)"""
+
+
+def _markov_iter_sql(i: int) -> str:
+    prev = f"p{i - 1}"
+    return f"""
+    p{i} AS (
+        SELECT sw.removed, sw.src AS state,
+               CAST(SUM(sw.w * (CASE WHEN sw.dst = 'conv' THEN 1000000000000
+                                     WHEN sw.dst = 'null' THEN 0
+                                     ELSE COALESCE(q.p, 0) END)
+                        // 1000000) AS BIGINT) AS p
+        FROM sw LEFT JOIN {prev} q
+            ON q.removed = sw.removed AND q.state = sw.dst
+        GROUP BY 1, 2
+    )"""
+
+
+@query(
+    "ev_removal_effect",
+    oracle="WITH "
+    + _JOURNEY_TRANS_CTE
+    + f""",
     w AS (
         SELECT t.src, t.dst, t.cnt * 1000000 // o.out_n AS w
         FROM trans t JOIN o ON o.src = t.src
@@ -2668,35 +2592,19 @@ def ev_bot_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_HW_SEASON = " ".join(f"WHEN {j} THEN r.s{j}" for j in range(7))
 _HW_S_BASE = ", ".join(f"CAST(0.0 AS DOUBLE)" for _ in range(7))
 _HW_S_STEP = ",\n               ".join(
     f"CASE WHEN (s.i - 1) % 7 = {k} THEN ((s.x - "
     "((s.x - (CASE (s.i - 1) % 7 "
-    + " ".join(f"WHEN {j} THEN r.s{j}" for j in range(7))
+    + _HW_SEASON
     + " END) + (r.l + r.b)) / 2.0)"
     f") + r.s{k}) / 2.0 ELSE r.s{k} END AS s{k}"
     for k in range(7)
 )
 
-
-@query(
-    "ev_holt_winters",
-    oracle=f"""
-    WITH RECURSIVE ev AS (
-        SELECT event_type, CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day,
-               CAST(value AS DECIMAL(18,6)) AS vd
-        FROM events
-    ),
-    daily AS (
-        SELECT event_type, day,
-               ROUND(CAST(SUM(vd) AS DOUBLE) / COUNT(*), 6) AS x
-        FROM ev GROUP BY 1, 2
-    ),
-    seqd AS (
-        SELECT event_type, day, x,
-               ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS i
-        FROM daily
-    ),
+# shared oracle CTE: the additive Holt-Winters recursion over ``seqd``
+_HW_REC_CTE = f"""
     rec(event_type, i, l, b, s0, s1, s2, s3, s4, s5, s6) AS (
         SELECT event_type, i, CAST(x AS DOUBLE), CAST(0.0 AS DOUBLE),
                {_HW_S_BASE}
@@ -2704,25 +2612,34 @@ _HW_S_STEP = ",\n               ".join(
         UNION ALL
         SELECT s.event_type, s.i,
                ((s.x - (CASE (s.i - 1) % 7
-                        {" ".join(f"WHEN {j} THEN r.s{j}" for j in range(7))}
+                        {_HW_SEASON}
                         END)) + (r.l + r.b)) / 2.0,
                ((((s.x - (CASE (s.i - 1) % 7
-                          {" ".join(f"WHEN {j} THEN r.s{j}" for j in range(7))}
+                          {_HW_SEASON}
                           END)) + (r.l + r.b)) / 2.0 - r.l) + r.b) / 2.0,
                {_HW_S_STEP}
         FROM rec r
         JOIN seqd s ON s.event_type = r.event_type AND s.i = r.i + 1
-    ),
+    )"""
+
+
+@query(
+    "ev_holt_winters",
+    oracle="WITH RECURSIVE "
+    + _DAILY_SERIES_CTE
+    + ","
+    + _HW_REC_CTE
+    + f""",
     fin AS (SELECT event_type, MAX(i) AS n FROM rec GROUP BY 1)
     SELECT r.event_type, CAST(fin.n AS BIGINT) AS n_days,
            ROUND(r.l, 6) AS level, ROUND(r.b, 6) AS trend,
            ROUND(r.l + 1.0 * r.b
                  + (CASE fin.n % 7
-                    {" ".join(f"WHEN {j} THEN r.s{j}" for j in range(7))}
+                    {_HW_SEASON}
                     END), 6) AS f1,
            ROUND(r.l + 7.0 * r.b
                  + (CASE (fin.n + 6) % 7
-                    {" ".join(f"WHEN {j} THEN r.s{j}" for j in range(7))}
+                    {_HW_SEASON}
                     END), 6) AS f7
     FROM rec r JOIN fin ON fin.event_type = r.event_type AND r.i = fin.n
     """,
@@ -2775,47 +2692,9 @@ def _occ_iter_sql(k: int) -> str:
 
 @query(
     "ev_occupancy",
-    oracle=f"""
-    WITH ev AS (
-        SELECT user_id AS u, ts, event_id AS eid, event_type AS et
-        FROM events
-        WHERE event_type IN ('click', 'view', 'signup', 'purchase')
-    ),
-    j AS (
-        SELECT u, ts, eid, et,
-               COALESCE(SUM(CASE WHEN et = 'purchase' THEN 1 ELSE 0 END)
-                        OVER (PARTITION BY u ORDER BY ts, eid
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                                       AND 1 PRECEDING), 0) AS jid
-        FROM ev
-    ),
-    jp AS (
-        SELECT u, jid,
-               MAX(CASE WHEN et = 'purchase' THEN 1 ELSE 0 END) AS has_conv
-        FROM j GROUP BY 1, 2
-    ),
-    seq AS (
-        SELECT u, jid, et,
-               ROW_NUMBER() OVER (PARTITION BY u, jid ORDER BY ts, eid) AS rn,
-               LEAD(et, 1) OVER (PARTITION BY u, jid ORDER BY ts, eid) AS nxt
-        FROM j WHERE et != 'purchase'
-    ),
-    alltr AS (
-        SELECT et AS src, nxt AS dst FROM seq WHERE nxt IS NOT NULL
-        UNION ALL
-        SELECT 'start', et FROM seq WHERE rn = 1
-        UNION ALL
-        SELECT s.et, CASE WHEN jp.has_conv = 1 THEN 'conv' ELSE 'null' END
-        FROM seq s JOIN jp ON jp.u = s.u AND jp.jid = s.jid
-        WHERE s.nxt IS NULL
-        UNION ALL
-        SELECT 'start', 'conv' FROM jp
-        WHERE has_conv = 1 AND NOT EXISTS (
-            SELECT 1 FROM seq WHERE seq.u = jp.u AND seq.jid = jp.jid
-        )
-    ),
-    trans AS (SELECT src, dst, COUNT(*) AS cnt FROM alltr GROUP BY 1, 2),
-    o AS (SELECT src, SUM(cnt) AS out_n FROM trans GROUP BY 1),
+    oracle="WITH "
+    + _JOURNEY_TRANS_CTE
+    + f""",
     w2 AS MATERIALIZED (
         SELECT t.src, t.dst, t.cnt * 1000000 // o.out_n AS w
         FROM trans t JOIN o ON o.src = t.src
@@ -2854,43 +2733,16 @@ def ev_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ev_hw_backtest",
-    oracle=f"""
-    WITH RECURSIVE ev AS (
-        SELECT event_type, CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day,
-               CAST(value AS DECIMAL(18,6)) AS vd
-        FROM events
-    ),
-    daily AS (
-        SELECT event_type, day,
-               ROUND(CAST(SUM(vd) AS DOUBLE) / COUNT(*), 6) AS x
-        FROM ev GROUP BY 1, 2
-    ),
-    seqd AS (
-        SELECT event_type, day, x,
-               ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS i
-        FROM daily
-    ),
-    rec(event_type, i, l, b, s0, s1, s2, s3, s4, s5, s6) AS (
-        SELECT event_type, i, CAST(x AS DOUBLE), CAST(0.0 AS DOUBLE),
-               {_HW_S_BASE}
-        FROM seqd WHERE i = 1
-        UNION ALL
-        SELECT s.event_type, s.i,
-               ((s.x - (CASE (s.i - 1) % 7
-                        {" ".join(f"WHEN {j} THEN r.s{j}" for j in range(7))}
-                        END)) + (r.l + r.b)) / 2.0,
-               ((((s.x - (CASE (s.i - 1) % 7
-                          {" ".join(f"WHEN {j} THEN r.s{j}" for j in range(7))}
-                          END)) + (r.l + r.b)) / 2.0 - r.l) + r.b) / 2.0,
-               {_HW_S_STEP}
-        FROM rec r
-        JOIN seqd s ON s.event_type = r.event_type AND s.i = r.i + 1
-    ),
+    oracle="WITH RECURSIVE "
+    + _DAILY_SERIES_CTE
+    + ","
+    + _HW_REC_CTE
+    + f""",
     fin AS (SELECT event_type, MAX(i) AS n FROM rec GROUP BY 1),
     picks AS (
         SELECT r.event_type, r.i, r.l, r.b,
                (CASE r.i % 7
-                {" ".join(f"WHEN {j} THEN r.s{j}" for j in range(7))}
+                {_HW_SEASON}
                 END) AS snext
         FROM rec r JOIN fin ON fin.event_type = r.event_type
         WHERE r.i >= GREATEST(fin.n - 3, 1) AND r.i <= fin.n - 1

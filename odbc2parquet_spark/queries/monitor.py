@@ -587,9 +587,8 @@ def ev_benford_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("digit")
 
 
-@query(
-    "ev_stl_decompose",
-    oracle="""
+# the decomposition oracle; ev_seasonal_anomalies embeds it as a CTE
+_STL_ORACLE = """
     WITH daily AS (
         SELECT CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day,
                SUM(CAST(value AS DECIMAL(18,6))) AS val_dec
@@ -618,7 +617,12 @@ def ev_benford_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(ROUND(CAST(f.detr AS DOUBLE) / 7, 6) - s.seasonal, 6) AS resid
     FROM full_w f JOIN seas s USING (phase)
     ORDER BY f.day
-    """,
+    """
+
+
+@query(
+    "ev_stl_decompose",
+    oracle=_STL_ORACLE,
 )
 def ev_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classical additive seasonal decomposition of daily revenue
@@ -646,35 +650,9 @@ def ev_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ev_seasonal_anomalies",
     oracle="""
-    WITH stl AS (
-    WITH daily AS (
-            SELECT CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day,
-                   SUM(CAST(value AS DECIMAL(18,6))) AS val_dec
-            FROM events GROUP BY 1
-        ),
-        win AS (
-            SELECT day, val_dec,
-                   COUNT(*) OVER w AS n7,
-                   SUM(val_dec) OVER w AS s7
-            FROM daily
-            WINDOW w AS (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-        ),
-        full_w AS (
-            SELECT day, val_dec, s7, 7 * val_dec - s7 AS detr, day % 7 AS phase
-            FROM win WHERE n7 = 7
-        ),
-        seas AS (
-            SELECT phase,
-                   ROUND(CAST(SUM(detr) AS DOUBLE) / (7.0 * COUNT(*)), 6)
-                       AS seasonal
-            FROM full_w GROUP BY 1
-        )
-        SELECT f.day, ROUND(CAST(f.val_dec AS DOUBLE), 6) AS val,
-               ROUND(CAST(f.s7 AS DOUBLE) / 7, 6) AS trend,
-               s.seasonal,
-               ROUND(ROUND(CAST(f.detr AS DOUBLE) / 7, 6) - s.seasonal, 6) AS resid
-        FROM full_w f JOIN seas s USING (phase)
-        ORDER BY f.day
+    WITH stl AS ("""
+    + _STL_ORACLE
+    + """
     ),
     m AS (SELECT ROUND(quantile_cont(resid, 0.5), 6) AS med FROM stl),
     md AS (

@@ -1118,9 +1118,8 @@ def q_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_fuzzy_match",
-    oracle="""
+# the fuzzy-match oracle; q_entity_resolution embeds it as a CTE
+_FUZZY_ORACLE = """
     WITH probes AS (
         SELECT c_custkey AS probe_id, c_nationkey,
                substring(c_name, 1, 14)
@@ -1157,7 +1156,12 @@ def q_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      ORDER BY distance, matched_id) AS rnk
         FROM scored
     ) WHERE rnk = 1
-    """,
+    """
+
+
+@query(
+    "q_fuzzy_match",
+    oracle=_FUZZY_ORACLE,
 )
 def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution at bounded block size: a deterministically-dirtied
@@ -1640,43 +1644,9 @@ def q_exact_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_entity_resolution",
     oracle="""
-    WITH RECURSIVE fz AS (
-    WITH probes AS (
-            SELECT c_custkey AS probe_id, c_nationkey,
-                   substring(c_name, 1, 14)
-                   || translate(substring(c_name, 15, 1),
-                                '0123456789', '1234567890')
-                   || substring(c_name, 16) AS pname
-            FROM customer WHERE c_custkey % 20 = 0
-        ),
-        pos AS (SELECT unnest(generate_series(0, 8)) AS pos),
-        pk AS (
-            SELECT probe_id, pname,
-                   CAST(c_nationkey AS VARCHAR) || ':' || CAST(pos AS VARCHAR)
-                   || ':' || substring(substring(pname, 10, 9), 1, pos)
-                   || substring(substring(pname, 10, 9), pos + 2) AS bkey
-            FROM probes CROSS JOIN pos
-        ),
-        mk AS (
-            SELECT c_custkey AS matched_id, c_name AS mname,
-                   CAST(c_nationkey AS VARCHAR) || ':' || CAST(pos AS VARCHAR)
-                   || ':' || substring(substring(c_name, 10, 9), 1, pos)
-                   || substring(substring(c_name, 10, 9), pos + 2) AS bkey
-            FROM customer CROSS JOIN pos
-        ),
-        pairs AS (
-            SELECT DISTINCT probe_id, pname, matched_id, mname
-            FROM pk JOIN mk USING (bkey)
-        ),
-        scored AS (
-            SELECT probe_id, matched_id, levenshtein(pname, mname) AS distance
-            FROM pairs
-        )
-        SELECT probe_id, matched_id, distance FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id
-                                         ORDER BY distance, matched_id) AS rnk
-            FROM scored
-        ) WHERE rnk = 1
+    WITH RECURSIVE fz AS ("""
+    + _FUZZY_ORACLE
+    + """
     ),
     edges AS (
         SELECT probe_id + 1000000000 AS id_a, matched_id AS id_b

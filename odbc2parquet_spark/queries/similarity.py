@@ -53,15 +53,22 @@ _DOT = (
 )
 
 
-@query(
-    "sim_bruteforce_topk",
-    oracle=f"""
-    WITH n AS (
+def _norms_cte(name: str) -> str:
+    """``name``: every embedding with its squared norm ``nsq``."""
+    return f"""
+    {name} AS (
         SELECT vec_id, embedding,
                list_sum(list_transform(embedding,
                         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nsq
         FROM embeddings
-    ),
+    )"""
+
+
+@query(
+    "sim_bruteforce_topk",
+    oracle="WITH "
+    + _norms_cte("n")
+    + f""",
     scored AS (
         SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
                ROUND({_DOT} / SQRT(a.nsq * b.nsq), 4) AS cos4
@@ -102,6 +109,35 @@ def _sig_sql(n_planes: int = None) -> str:
     return " + ".join(bits)
 
 
+# shared oracle CTEs: 16-plane LSH signatures and their 8-bit buckets
+# (capped at 100000 ids)
+_LSH_BUCKETS_CTE = f"""
+    sig AS (
+        SELECT vec_id, CAST({_sig_sql()} AS BIGINT) AS sig FROM embeddings
+    ),
+    b AS (
+        SELECT vec_id, sig & 255 AS bucket FROM sig
+        QUALIFY COUNT(*) OVER (PARTITION BY sig & 255) <= 100000
+    )"""
+
+
+def _lsh_pairs_cte(name: str = "pairs") -> str:
+    """The LSH buckets plus ``name``: their pairs (id_a < id_b)."""
+    return _LSH_BUCKETS_CTE + f""",
+    {name} AS (
+        SELECT x.vec_id AS id_a, y.vec_id AS id_b
+        FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
+    )"""
+
+
+_SYM_SQL = """
+    sym AS (SELECT id_a AS src, id_b AS dst FROM pairs
+            UNION ALL SELECT id_b, id_a FROM pairs)"""
+
+# the capped LSH bucket graph in both directions
+_SYM_CTE = _lsh_pairs_cte() + "," + _SYM_SQL
+
+
 @query(
     "sim_lsh_signatures",
     oracle=f"""
@@ -129,17 +165,14 @@ _PQ_M = 32
 _PQ_SUB = 2
 _PQ_K = 256
 
-_CENT_CTE = f"""
+_CENT_CTE = (
+    f"""
 cent AS (
     SELECT vec_id AS centroid_id, embedding AS centroid
     FROM embeddings ORDER BY vec_id LIMIT {_K_CELLS}
-),
-nv AS (
-    SELECT vec_id, embedding,
-           list_sum(list_transform(embedding,
-                    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nsq
-    FROM embeddings
-),
+),"""
+    + _norms_cte("nv")
+    + """,
 nc AS (
     SELECT centroid_id, centroid,
            list_sum(list_transform(centroid,
@@ -160,6 +193,7 @@ assign AS (
         FROM assign_scored
     ) WHERE rnk = 1
 )"""
+)
 
 
 @query(
@@ -216,11 +250,9 @@ def sim_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.ivf_silhouette(emb, S.ivf_seed_centroids(emb, _K_CELLS))
 
 
-@query(
-    "sim_ivf_topk",
-    oracle="WITH "
-    + _CENT_CTE
-    + f""",
+def _qprobe_cte(nprobe: int = _NPROBE) -> str:
+    """``qprobe``: the ``nprobe`` cells nearest each of the first 10 vectors."""
+    return f"""
     qprobe AS (
         SELECT vec_id AS query_id, centroid_id FROM (
             SELECT v.vec_id, c.centroid_id,
@@ -232,8 +264,17 @@ def sim_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 / SQRT(v.nsq * c.csq), 4) DESC, c.centroid_id) AS rnk
             FROM nv v CROSS JOIN nc c
             WHERE v.vec_id < 10
-        ) WHERE rnk <= {_NPROBE}
-    ),
+        ) WHERE rnk <= {nprobe}
+    )"""
+
+
+@query(
+    "sim_ivf_topk",
+    oracle="WITH "
+    + _CENT_CTE
+    + ","
+    + _qprobe_cte()
+    + """,
     cand AS (
         SELECT q.query_id, a.vec_id AS neighbor_id
         FROM assign a JOIN qprobe q ON a.centroid_id = q.centroid_id
@@ -274,15 +315,9 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # build after the first construction.
 @query(
     "sim_lsh_bucket_pairs",
-    oracle=f"""
-    WITH sig AS (
-        SELECT vec_id, CAST({_sig_sql()} AS BIGINT) AS sig
-        FROM embeddings
-    ),
-    b AS (
-        SELECT vec_id, sig & 255 AS bucket FROM sig
-        QUALIFY COUNT(*) OVER (PARTITION BY sig & 255) <= 100000
-    )
+    oracle="WITH "
+    + _LSH_BUCKETS_CTE
+    + """
     SELECT x.vec_id AS id_a, y.vec_id AS id_b, x.bucket
     FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
     """,
@@ -549,7 +584,8 @@ def _pq_index_ctes(p: str = "") -> str:
     ``p`` prefix renames the CTEs when the block composes with other
     chains (sim_ivf_pq_topk adds the IVF assign CTEs, whose names would
     otherwise clash)."""
-    return f"""{p}seeds AS (
+    return f"""
+    {p}seeds AS (
         SELECT vec_id AS cid, embedding FROM embeddings ORDER BY vec_id LIMIT {_PQ_K}
     ),
     {p}sub AS (
@@ -603,20 +639,25 @@ def _pq_adc_scan_cte(p: str = "") -> str:
     )"""
 
 
-@query(
-    "sim_pq_adc_topk",
-    oracle="WITH "
-    + _pq_index_ctes()
-    + _pq_adc_scan_cte()
-    + """
+def _adc_top10_sql(adc: str = "adc") -> str:
+    """The 10 nearest neighbours of each probe by ADC distance in ``adc``."""
+    return f"""
     SELECT query_id, vec_id AS neighbor_id,
            CAST(adc_dec AS DOUBLE) AS adc4, CAST(rnk AS BIGINT) AS rank
     FROM (
         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                                      ORDER BY adc_dec, vec_id) AS rnk
-        FROM adc
+        FROM {adc}
     ) WHERE rnk <= 10
-    """,
+    """
+
+
+@query(
+    "sim_pq_adc_topk",
+    oracle="WITH "
+    + _pq_index_ctes()
+    + _pq_adc_scan_cte()
+    + _adc_top10_sql(),
 )
 def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC search over PQ codes (operators/similarity.pq_adc_topk): the
@@ -638,21 +679,9 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivf_pq_ctes(nprobe: int = _NPROBE) -> str:
     return (
         _CENT_CTE
-        + f""",
-    qprobe AS (
-        SELECT vec_id AS query_id, centroid_id FROM (
-            SELECT v.vec_id, c.centroid_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY ROUND(list_sum(list_transform(
-                                    list_zip(v.embedding, c.centroid),
-                                    x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                                / SQRT(v.nsq * c.csq), 4) DESC, c.centroid_id) AS rnk
-            FROM nv v CROSS JOIN nc c
-            WHERE v.vec_id < 10
-        ) WHERE rnk <= {nprobe}
-    ),
-    """
+        + ","
+        + _qprobe_cte(nprobe)
+        + ","
         + _pq_index_ctes("pq_")
         + """,
     cand AS (
@@ -678,15 +707,7 @@ _IVF_PQ_CTES = _ivf_pq_ctes()
     "sim_ivf_pq_topk",
     oracle="WITH "
     + _IVF_PQ_CTES
-    + """
-    SELECT query_id, vec_id AS neighbor_id,
-           CAST(adc_dec AS DOUBLE) AS adc4, CAST(rnk AS BIGINT) AS rank
-    FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY adc_dec, vec_id) AS rnk
-        FROM adc
-    ) WHERE rnk <= 10
-    """,
+    + _adc_top10_sql(),
 )
 def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ (operators/similarity.ivf_pq_search): coarse cell routing
@@ -704,19 +725,10 @@ def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "sim_pq_recall",
-    bench=False,
-    oracle="WITH "
-    + _pq_index_ctes()
-    + _pq_adc_scan_cte()
+# shared oracle CTEs: the exact cosine top 10 of each of the first 10 vectors
+_EXACT_TOP_CTE = (
+    _norms_cte("n")
     + f""",
-    n AS (
-        SELECT vec_id, embedding,
-               list_sum(list_transform(embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nsq
-        FROM embeddings
-    ),
     exact_scored AS (
         SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
                ROUND({_DOT} / SQRT(a.nsq * b.nsq), 4) AS cos4
@@ -728,26 +740,61 @@ def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                                          ORDER BY cos4 DESC, neighbor_id) AS rnk
             FROM exact_scored
         ) WHERE rnk <= 10
-    ),
+    )"""
+)
+
+
+def _adc_top_cte(adc: str = "adc") -> str:
+    """``adc_top``: the 10 nearest neighbours of each probe by ADC distance
+    in ``adc``."""
+    return f"""
     adc_top AS (
         SELECT query_id, vec_id AS neighbor_id FROM (
             SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                                          ORDER BY adc_dec, vec_id) AS rnk
-            FROM adc
+            FROM {adc}
         ) WHERE rnk <= 10
-    ),
-    hits AS (
+    )"""
+
+
+def _hits_cte(name: str = "hits") -> str:
+    """``name``: per probe, how many of its ``adc_top`` rows ``exact_top``
+    also holds."""
+    return f"""
+    {name} AS (
         SELECT a.query_id, COUNT(*) AS n_hits
         FROM adc_top a
         JOIN exact_top e ON e.query_id = a.query_id
                         AND e.neighbor_id = a.neighbor_id
         GROUP BY a.query_id
-    )
+    )"""
+
+
+def _recall10_sql(adc: str = "adc") -> str:
+    """Per-probe recall@10 of the ADC search ``adc`` against the exact top 10."""
+    return (
+        _EXACT_TOP_CTE
+        + ","
+        + _adc_top_cte(adc)
+        + ","
+        + _hits_cte()
+        + """
     SELECT q.query_id, CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
            CAST(COALESCE(h.n_hits, 0) / 10.0 AS DOUBLE) AS recall10
     FROM (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < 10) q
     LEFT JOIN hits h ON h.query_id = q.query_id
-    """,
+    """
+    )
+
+
+@query(
+    "sim_pq_recall",
+    bench=False,
+    oracle="WITH "
+    + _pq_index_ctes()
+    + _pq_adc_scan_cte()
+    + ","
+    + _recall10_sql(),
 )
 def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index-quality evaluation for the PQ path: per probe, how many of
@@ -861,44 +908,8 @@ _PQ_LLOYD_CTES = (
     oracle="WITH "
     + _pq_index_ctes()
     + _PQ_LLOYD_CTES
-    + f""",
-    n AS (
-        SELECT vec_id, embedding,
-               list_sum(list_transform(embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nsq
-        FROM embeddings
-    ),
-    exact_scored AS (
-        SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-               ROUND({_DOT} / SQRT(a.nsq * b.nsq), 4) AS cos4
-        FROM n a JOIN n b ON a.vec_id < 10 AND a.vec_id != b.vec_id
-    ),
-    exact_top AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY cos4 DESC, neighbor_id) AS rnk
-            FROM exact_scored
-        ) WHERE rnk <= 10
-    ),
-    adc_top AS (
-        SELECT query_id, vec_id AS neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY adc_dec, vec_id) AS rnk
-            FROM radc
-        ) WHERE rnk <= 10
-    ),
-    hits AS (
-        SELECT a.query_id, COUNT(*) AS n_hits
-        FROM adc_top a
-        JOIN exact_top e ON e.query_id = a.query_id
-                        AND e.neighbor_id = a.neighbor_id
-        GROUP BY a.query_id
-    )
-    SELECT q.query_id, CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-           CAST(COALESCE(h.n_hits, 0) / 10.0 AS DOUBLE) AS recall10
-    FROM (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < 10) q
-    LEFT JOIN hits h ON h.query_id = q.query_id
-    """,
+    + ","
+    + _recall10_sql("radc"),
 )
 def sim_pq_lloyd_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@10 of ADC search on a Lloyd-REFINED PQ codebook (two
@@ -943,44 +954,8 @@ def sim_pq_lloyd_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
     oracle="WITH "
     + _IVF_PQ_CTES
-    + f""",
-    n AS (
-        SELECT vec_id, embedding,
-               list_sum(list_transform(embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nsq
-        FROM embeddings
-    ),
-    exact_scored AS (
-        SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-               ROUND({_DOT} / SQRT(a.nsq * b.nsq), 4) AS cos4
-        FROM n a JOIN n b ON a.vec_id < 10 AND a.vec_id != b.vec_id
-    ),
-    exact_top AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY cos4 DESC, neighbor_id) AS rnk
-            FROM exact_scored
-        ) WHERE rnk <= 10
-    ),
-    adc_top AS (
-        SELECT query_id, vec_id AS neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY adc_dec, vec_id) AS rnk
-            FROM adc
-        ) WHERE rnk <= 10
-    ),
-    hits AS (
-        SELECT a.query_id, COUNT(*) AS n_hits
-        FROM adc_top a
-        JOIN exact_top e ON e.query_id = a.query_id
-                        AND e.neighbor_id = a.neighbor_id
-        GROUP BY a.query_id
-    )
-    SELECT q.query_id, CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-           CAST(COALESCE(h.n_hits, 0) / 10.0 AS DOUBLE) AS recall10
-    FROM (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < 10) q
-    LEFT JOIN hits h ON h.query_id = q.query_id
-    """,
+    + ","
+    + _recall10_sql(),
 )
 def sim_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the COMPOSED IVF-PQ index vs the exact ground truth —
@@ -1016,39 +991,13 @@ def sim_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sim_recall_floor",
     oracle="WITH "
     + _IVF_PQ_CTES
-    + f""",
-    n AS (
-        SELECT vec_id, embedding,
-               list_sum(list_transform(embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nsq
-        FROM embeddings
-    ),
-    exact_scored AS (
-        SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-               ROUND({_DOT} / SQRT(a.nsq * b.nsq), 4) AS cos4
-        FROM n a JOIN n b ON a.vec_id < 10 AND a.vec_id != b.vec_id
-    ),
-    exact_top AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY cos4 DESC, neighbor_id) AS rnk
-            FROM exact_scored
-        ) WHERE rnk <= 10
-    ),
-    adc_top AS (
-        SELECT query_id, vec_id AS neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY adc_dec, vec_id) AS rnk
-            FROM adc
-        ) WHERE rnk <= 10
-    ),
-    hits AS (
-        SELECT a.query_id, COUNT(*) AS n_hits
-        FROM adc_top a
-        JOIN exact_top e ON e.query_id = a.query_id
-                        AND e.neighbor_id = a.neighbor_id
-        GROUP BY a.query_id
-    ),
+    + ","
+    + _EXACT_TOP_CTE
+    + ","
+    + _adc_top_cte()
+    + ","
+    + _hits_cte()
+    + """,
     per_q AS (
         SELECT q.query_id, COALESCE(h.n_hits, 0) AS n_hits
         FROM (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < 10) q
@@ -1103,26 +1052,11 @@ def sim_recall_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shared oracle CTE: the approximate k-NN graph (k=5) — used by
 # sim_knn_graph and sim_jaccard_links so a hash match on the latter
 # certifies the same graph construction end-to-end
-_KNN_CTE = f"""
-    sig AS (
-        SELECT vec_id, CAST({{sig}} AS BIGINT) AS sig FROM embeddings
-    ),
-    b AS (
-        SELECT vec_id, sig & 255 AS bucket FROM sig
-        QUALIFY COUNT(*) OVER (PARTITION BY sig & 255) <= 100000
-    ),
-    pairs AS (
-        SELECT x.vec_id AS id_a, y.vec_id AS id_b
-        FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
-    ),
-    sym AS (SELECT id_a AS src, id_b AS dst FROM pairs
-            UNION ALL SELECT id_b, id_a FROM pairs),
-    nv AS (
-        SELECT vec_id, embedding,
-               list_sum(list_transform(embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nsq
-        FROM embeddings
-    ),
+_KNN_CTE = (
+    _SYM_CTE
+    + ","
+    + _norms_cte("nv")
+    + """,
     scored AS (
         SELECT s.src AS vec_id, s.dst AS neighbor_id,
                ROUND(list_sum(list_transform(list_zip(a.embedding, b.embedding),
@@ -1140,7 +1074,8 @@ _KNN_CTE = f"""
             FROM scored
         ) WHERE rank <= 5
     )
-""".replace("{sig}", _sig_sql())
+"""
+)
 
 
 @query(
@@ -1190,16 +1125,34 @@ def sim_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_iter_sql(i: int) -> str:
-    prev = f"r{i - 1}"
+# shared oracle CTEs: the uncapped LSH bucket graph in both directions,
+# with out-degrees
+_RANK_GRAPH_CTE = f"""
+    sig AS (
+        SELECT vec_id, CAST({_sig_sql()} AS BIGINT) AS sig FROM embeddings
+    ),
+    b AS (SELECT vec_id, sig & 255 AS bucket FROM sig),
+    pairs AS (
+        SELECT x.vec_id AS id_a, y.vec_id AS id_b
+        FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
+    ),{_SYM_SQL},
+    deg AS (SELECT src, COUNT(*) AS out_deg FROM sym GROUP BY src)"""
+
+
+def _rank_push_cte(i: int) -> str:
+    """``c{i}``: the rank each node receives from ``r{i - 1}`` over ``sym``."""
     return f"""
     c{i} AS (
         SELECT s.dst AS id, SUM(r.rank // d.out_deg) AS s
         FROM sym s
-        JOIN {prev} r ON r.id = s.src
+        JOIN r{i - 1} r ON r.id = s.src
         JOIN deg d ON d.src = s.src
         GROUP BY s.dst
-    ),
+    )"""
+
+
+def _pagerank_iter_sql(i: int) -> str:
+    return _rank_push_cte(i) + f""",
     r{i} AS (
         SELECT e.vec_id AS id,
                CAST((15 * p.base) // 100
@@ -1212,22 +1165,12 @@ def _pagerank_iter_sql(i: int) -> str:
 @query(
     "sim_pagerank",
     oracle=f"""
-    WITH sig AS (
-        SELECT vec_id, CAST({{sig}} AS BIGINT) AS sig FROM embeddings
-    ),
-    b AS (SELECT vec_id, sig & 255 AS bucket FROM sig),
-    pairs AS (
-        SELECT x.vec_id AS id_a, y.vec_id AS id_b
-        FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
-    ),
-    sym AS (SELECT id_a AS src, id_b AS dst FROM pairs
-            UNION ALL SELECT id_b, id_a FROM pairs),
-    deg AS (SELECT src, COUNT(*) AS out_deg FROM sym GROUP BY src),
+    WITH {_RANK_GRAPH_CTE},
     p AS (SELECT CAST(1000000000000 // COUNT(*) AS BIGINT) AS base FROM embeddings),
     r0 AS (SELECT e.vec_id AS id, p.base AS rank FROM embeddings e CROSS JOIN p),
     {",".join(_pagerank_iter_sql(i) for i in range(1, 4)).lstrip(",")}
     SELECT id, rank FROM r3
-    """.replace("{sig}", _sig_sql()),
+    """,
 )
 def sim_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer-exact PageRank (3 iterations, micro-unit int64 arithmetic)
@@ -1247,15 +1190,7 @@ def sim_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ppr_iter_sql(i: int) -> str:
-    prev = f"r{i - 1}"
-    return f"""
-    c{i} AS (
-        SELECT s.dst AS id, SUM(r.rank // d.out_deg) AS s
-        FROM sym s
-        JOIN {prev} r ON r.id = s.src
-        JOIN deg d ON d.src = s.src
-        GROUP BY s.dst
-    ),
+    return _rank_push_cte(i) + f""",
     r{i} AS (
         SELECT id, rank FROM (
             SELECT COALESCE(sd.id, c{i}.id) AS id,
@@ -1270,23 +1205,13 @@ def _ppr_iter_sql(i: int) -> str:
 @query(
     "sim_ppr",
     oracle=f"""
-    WITH sig AS (
-        SELECT vec_id, CAST({{sig}} AS BIGINT) AS sig FROM embeddings
-    ),
-    b AS (SELECT vec_id, sig & 255 AS bucket FROM sig),
-    pairs AS (
-        SELECT x.vec_id AS id_a, y.vec_id AS id_b
-        FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
-    ),
-    sym AS (SELECT id_a AS src, id_b AS dst FROM pairs
-            UNION ALL SELECT id_b, id_a FROM pairs),
-    deg AS (SELECT src, COUNT(*) AS out_deg FROM sym GROUP BY src),
+    WITH {_RANK_GRAPH_CTE},
     seeds AS (SELECT vec_id AS id FROM embeddings WHERE vec_id % 50 = 0),
     p AS (SELECT CAST(1000000000000 // COUNT(*) AS BIGINT) AS base FROM seeds),
     r0 AS (SELECT id, (SELECT base FROM p) AS rank FROM seeds),
     {",".join(_ppr_iter_sql(i) for i in range(1, 4)).lstrip(",")}
     SELECT id, rank FROM r3
-    """.replace("{sig}", _sig_sql()),
+    """,
 )
 def sim_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank: random walk with restart to a 1-in-50 seed
@@ -1341,14 +1266,9 @@ def sim_multiprobe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_negative_samples",
-    oracle=f"""
-    WITH sig AS (
-        SELECT vec_id, CAST({{sig}} AS BIGINT) AS sig FROM embeddings
-    ),
-    b AS (
-        SELECT vec_id, sig & 255 AS bucket FROM sig
-        QUALIFY COUNT(*) OVER (PARTITION BY sig & 255) <= 100000
-    ),
+    oracle="WITH "
+    + _LSH_BUCKETS_CTE
+    + """,
     near AS (
         SELECT x.vec_id AS anchor, y.vec_id AS neighbor
         FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id != y.vec_id
@@ -1366,7 +1286,7 @@ def sim_multiprobe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE c.cand_id != c.anchor
       AND NOT EXISTS (SELECT 1 FROM near nr
                       WHERE nr.anchor = c.anchor AND nr.neighbor = c.cand_id)
-    """.replace("{sig}", _sig_sql()),
+    """,
 )
 def sim_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive-training negative mining: 8 deterministic hash-drawn
@@ -1416,13 +1336,9 @@ def sim_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "sim_candidate_recall",
     bench=False,
-    oracle=f"""
-    WITH nv AS (
-        SELECT vec_id, embedding,
-               list_sum(list_transform(embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nsq
-        FROM embeddings
-    ),
+    oracle="WITH "
+    + _norms_cte("nv")
+    + f""",
     truth AS (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b
         FROM nv a JOIN nv b ON a.vec_id < b.vec_id
@@ -1607,18 +1523,9 @@ def dd_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_triangle_count",
-    oracle=f"""
-    WITH sig AS (
-        SELECT vec_id, CAST({{sig}} AS BIGINT) AS sig FROM embeddings
-    ),
-    b AS (
-        SELECT vec_id, sig & 255 AS bucket FROM sig
-        QUALIFY COUNT(*) OVER (PARTITION BY sig & 255) <= 100000
-    ),
-    edges AS (
-        SELECT x.vec_id AS id_a, y.vec_id AS id_b
-        FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
-    ),
+    oracle="WITH "
+    + _lsh_pairs_cte("edges")
+    + """,
     tri AS (
         SELECT e1.id_a AS a, e1.id_b AS b, e2.id_b AS c
         FROM edges e1
@@ -1628,7 +1535,7 @@ def dd_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT id, CAST(COUNT(*) AS BIGINT) AS n_triangles
     FROM (SELECT unnest([a, b, c]) AS id FROM tri)
     GROUP BY id
-    """.replace("{sig}", _sig_sql()),
+    """,
 )
 def sim_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle counts over the 8-bit-prefix LSH bucket graph —
@@ -1690,13 +1597,10 @@ def sim_ivf_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _mmr_oracle(n_probes: int = 8, k_cand: int = 12, k_sel: int = 4) -> str:
     """Unrolled MMR oracle: the greedy argmax loop as k_sel chained CTEs,
     generated so the step count can't drift from the Spark side."""
-    head = f"""
-    WITH n AS (
-        SELECT vec_id, embedding,
-               list_sum(list_transform(embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nsq
-        FROM embeddings
-    ),
+    head = (
+        "\n    WITH "
+        + _norms_cte("n")
+        + f""",
     scored AS (
         SELECT a.vec_id AS p, b.vec_id AS c,
                ROUND({_DOT} / SQRT(a.nsq * b.nsq), 4) AS rel
@@ -1724,6 +1628,7 @@ def _mmr_oracle(n_probes: int = 8, k_cand: int = 12, k_sel: int = 4) -> str:
         JOIN sel1 ON cd.p = sel1.p AND cd.c != sel1.c
         JOIN sims s ON s.p = cd.p AND s.c1 = cd.c AND s.c2 = sel1.c
     )"""
+    )
     parts = [head]
     for t in range(2, k_sel + 1):
         parts.append(f""",
@@ -1928,32 +1833,7 @@ def _nprobe_branch(p: int) -> str:
     SELECT {p} AS nprobe, n_hits,
            ROUND(CAST(n_hits AS DOUBLE) / 100, 6) AS mean_recall10
     FROM (
-        WITH {_ivf_pq_ctes(p)},
-        n AS (
-            SELECT vec_id, embedding,
-                   list_sum(list_transform(embedding,
-                            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nsq
-            FROM embeddings
-        ),
-        exact_scored AS (
-            SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-                   ROUND({_DOT} / SQRT(a.nsq * b.nsq), 4) AS cos4
-            FROM n a JOIN n b ON a.vec_id < 10 AND a.vec_id != b.vec_id
-        ),
-        exact_top AS (
-            SELECT query_id, neighbor_id FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                             ORDER BY cos4 DESC, neighbor_id) AS rnk
-                FROM exact_scored
-            ) WHERE rnk <= 10
-        ),
-        adc_top AS (
-            SELECT query_id, vec_id AS neighbor_id FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                             ORDER BY adc_dec, vec_id) AS rnk
-                FROM adc
-            ) WHERE rnk <= 10
-        )
+        WITH {_ivf_pq_ctes(p)},{_EXACT_TOP_CTE},{_adc_top_cte()}
         SELECT CAST(COUNT(*) AS BIGINT) AS n_hits
         FROM adc_top a
         JOIN exact_top e ON e.query_id = a.query_id
@@ -2101,13 +1981,9 @@ def sim_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
                        ORDER BY ROUND(tf * 1.0 / n, 6) DESC, doc_id) AS rk
             FROM kw WHERE tf > 0
         ) WHERE rk <= 20
-    ),
-    nv AS (
-        SELECT vec_id, embedding,
-               list_sum(list_transform(embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nsq
-        FROM embeddings
-    ),
+    ),"""
+    + _norms_cte("nv")
+    + """,
     p AS (SELECT embedding AS pv, nsq AS psq FROM nv WHERE vec_id = 0),
     vrank AS (
         SELECT vec_id AS doc_id, rk AS vec_rank FROM (
@@ -2257,20 +2133,9 @@ def _ivf_pq_res_ctes(nprobe: int = _NPROBE) -> str:
                                          ORDER BY d2, cid) AS rn
             FROM rscored
         ) WHERE rn = 1
-    ),
-    qprobe AS (
-        SELECT vec_id AS query_id, centroid_id FROM (
-            SELECT v.vec_id, c.centroid_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY ROUND(list_sum(list_transform(
-                                    list_zip(v.embedding, c.centroid),
-                                    x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                                / SQRT(v.nsq * c.csq), 4) DESC, c.centroid_id) AS rnk
-            FROM nv v CROSS JOIN nc c
-            WHERE v.vec_id < 10
-        ) WHERE rnk <= {nprobe}
-    ),
+    ),"""
+        + _qprobe_cte(nprobe)
+        + f""",
     qres AS (
         SELECT qp.query_id, qp.centroid_id,
                list_transform(list_zip(e.embedding, cv.cvec),
@@ -2312,15 +2177,7 @@ def _ivf_pq_res_ctes(nprobe: int = _NPROBE) -> str:
     "sim_ivf_pq_res_topk",
     oracle="WITH "
     + _ivf_pq_res_ctes()
-    + """
-    SELECT query_id, vec_id AS neighbor_id,
-           CAST(adc_dec AS DOUBLE) AS adc4, CAST(rnk AS BIGINT) AS rank
-    FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY adc_dec, vec_id) AS rnk
-        FROM radc
-    ) WHERE rnk <= 10
-    """,
+    + _adc_top10_sql("radc"),
 )
 def sim_ivf_pq_res_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RESIDUAL-encoded IVF-PQ search — the layout FAISS's IndexIVFPQ
@@ -2343,44 +2200,8 @@ def sim_ivf_pq_res_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sim_ivf_pq_res_recall",
     oracle="WITH "
     + _ivf_pq_res_ctes()
-    + f""",
-    n AS (
-        SELECT vec_id, embedding,
-               list_sum(list_transform(embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nsq
-        FROM embeddings
-    ),
-    exact_scored AS (
-        SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-               ROUND({_DOT} / SQRT(a.nsq * b.nsq), 4) AS cos4
-        FROM n a JOIN n b ON a.vec_id < 10 AND a.vec_id != b.vec_id
-    ),
-    exact_top AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY cos4 DESC, neighbor_id) AS rnk
-            FROM exact_scored
-        ) WHERE rnk <= 10
-    ),
-    adc_top AS (
-        SELECT query_id, vec_id AS neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY adc_dec, vec_id) AS rnk
-            FROM radc
-        ) WHERE rnk <= 10
-    ),
-    hits AS (
-        SELECT a.query_id, COUNT(*) AS n_hits
-        FROM adc_top a
-        JOIN exact_top e ON e.query_id = a.query_id
-                        AND e.neighbor_id = a.neighbor_id
-        GROUP BY a.query_id
-    )
-    SELECT q.query_id, CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-           CAST(COALESCE(h.n_hits, 0) / 10.0 AS DOUBLE) AS recall10
-    FROM (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < 10) q
-    LEFT JOIN hits h ON h.query_id = q.query_id
-    """,
+    + ","
+    + _recall10_sql("radc"),
 )
 def sim_ivf_pq_res_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the RESIDUAL IVF-PQ index vs the exact ground truth —
@@ -2520,22 +2341,6 @@ def sim_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SYM_CTE = """
-    sig AS (
-        SELECT vec_id, CAST({sig} AS BIGINT) AS sig FROM embeddings
-    ),
-    b AS (
-        SELECT vec_id, sig & 255 AS bucket FROM sig
-        QUALIFY COUNT(*) OVER (PARTITION BY sig & 255) <= 100000
-    ),
-    pairs AS (
-        SELECT x.vec_id AS id_a, y.vec_id AS id_b
-        FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
-    ),
-    sym AS (SELECT id_a AS src, id_b AS dst FROM pairs
-            UNION ALL SELECT id_b, id_a FROM pairs)"""
-
-
 def _hits_iter_sql(i: int) -> str:
     prev_a = f"a{i - 1}"
     return f"""
@@ -2563,7 +2368,7 @@ def _hits_iter_sql(i: int) -> str:
     {",".join(_hits_iter_sql(i) for i in range(1, 3)).lstrip(",")}
     SELECT h2.id, h2.score AS hub, a2.score AS auth
     FROM h2 JOIN a2 ON a2.id = h2.id
-    """.replace("{sig}", _sig_sql()),
+    """,
 )
 def sim_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs/authorities (2 full rounds, UNNORMALIZED exact int64 —
@@ -2615,7 +2420,7 @@ def _lpa_iter_sql(i: int) -> str:
     l0 AS (SELECT vec_id AS id, CAST(vec_id AS BIGINT) AS label FROM embeddings),
     {",".join(_lpa_iter_sql(i) for i in range(1, 4)).lstrip(",")}
     SELECT id, label FROM l3
-    """.replace("{sig}", _sig_sql()),
+    """,
 )
 def sim_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Label-propagation communities (3 synchronous rounds, deterministic
@@ -2642,14 +2447,9 @@ def sim_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_clustering_coeff",
-    oracle=f"""
-    WITH sig AS (
-        SELECT vec_id, CAST({{sig}} AS BIGINT) AS sig FROM embeddings
-    ),
-    b AS (
-        SELECT vec_id, sig & 255 AS bucket FROM sig
-        QUALIFY COUNT(*) OVER (PARTITION BY sig & 255) <= 100000
-    ),
+    oracle="WITH "
+    + _LSH_BUCKETS_CTE
+    + """,
     edges AS MATERIALIZED (
         SELECT x.vec_id AS id_a, y.vec_id AS id_b
         FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
@@ -2676,7 +2476,7 @@ def sim_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(2.0 * COALESCE(t.n_triangles, 0)
                  / (d.degree * (d.degree - 1)), 6) AS coeff6
     FROM deg d LEFT JOIN tcnt t ON t.id = d.id
-    """.replace("{sig}", _sig_sql()),
+    """,
 )
 def sim_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local clustering coefficient over the LSH bucket graph (operators/

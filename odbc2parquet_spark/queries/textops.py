@@ -15,6 +15,21 @@ from odbc2parquet_spark.catalog import load_table, spread_scan
 from odbc2parquet_spark.operators import multimodal as M
 from odbc2parquet_spark.operators import text as X
 from odbc2parquet_spark.queries import query
+from odbc2parquet_spark.queries.dedup import (
+    _INCREMENTAL_DROPPED_CTE,
+    _MINHASH_CAND_CTE,
+    _MINHASH_MINS,
+    _SHINGLES_CTE,
+    _jaccard_pairs_cte,
+    _prefix_jaccard_sql,
+    _shared_shingles_cte,
+)
+from odbc2parquet_spark.queries.similarity import (
+    _EXACT_TOP_CTE,
+    _IVF_PQ_CTES,
+    _adc_top_cte,
+    _hits_cte,
+)
 
 
 @query(
@@ -54,28 +69,35 @@ def tx_dedup_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return X.normalize_stats(load_table(spark, sf_dir, "documents"))
 
 
-@query(
-    "tx_quality_scores",
-    oracle="""
-    WITH base AS (
-        SELECT doc_id,
-               len(list_filter(string_split(text, ' '), w -> w != '')) AS n_words,
+# shared oracle SQL: the quality-score inputs of a ``documents`` row, and
+# the score over them
+_QUALITY_INPUTS = """len(list_filter(string_split(text, ' '), w -> w != '')) AS n_words,
                length(text) AS n_chars,
                length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha,
                len(list_filter(string_split(text, ' '),
-                   w -> w IN ('the','a','and','of','to','in','is'))) AS n_stop
+                   w -> w IN ('the','a','and','of','to','in','is'))) AS n_stop"""
+
+_QUALITY_SCORE = """(CASE WHEN n_words >= 10 THEN 0.25 ELSE 0.0 END)
+               + (n_alpha / n_chars) * 0.25
+               + (n_stop / n_words) * 0.25
+               + (CASE WHEN (n_chars - (n_words - 1)) / n_words >= 3
+                        AND (n_chars - (n_words - 1)) / n_words <= 10
+                  THEN 0.25 ELSE 0.0 END)"""
+
+
+@query(
+    "tx_quality_scores",
+    oracle=f"""
+    WITH base AS (
+        SELECT doc_id,
+               {_QUALITY_INPUTS}
         FROM documents
     )
     SELECT doc_id, n_words, n_chars,
            n_alpha / n_chars AS alpha_ratio,
            n_stop / n_words AS stop_ratio,
            (n_chars - (n_words - 1)) / n_words AS mean_word_len,
-           (CASE WHEN n_words >= 10 THEN 0.25 ELSE 0.0 END)
-           + (n_alpha / n_chars) * 0.25
-           + (n_stop / n_words) * 0.25
-           + (CASE WHEN (n_chars - (n_words - 1)) / n_words >= 3
-                    AND (n_chars - (n_words - 1)) / n_words <= 10
-              THEN 0.25 ELSE 0.0 END) AS quality_score
+           {_QUALITY_SCORE} AS quality_score
     FROM base
     """,
 )
@@ -204,33 +226,19 @@ def mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "out_width", "out_height", "out_n_bytes", "out_checksum")
 
 
-_PIPE_MINHASH = ", ".join(
-    f"MIN((CAST('0x' || substring(md5(g), 1, 15) AS BIGINT) + {j} * "
-    f"CAST('0x' || substring(md5(g), 16, 15) AS BIGINT)) % {1 << 60}) AS mh{j}"
-    for j in range(8)
-)
-
 #: the composed pipeline's stage CTEs (quality gate -> exact dedup ->
 #: MinHash banding -> verified losers), shared by the tx_prepare_corpus
 #: and tx_pipeline_funnel oracles so both certify the SAME stage chain —
 #: mirrors operators/pipelines._corpus_stages on the Spark side.
-_PIPE_STAGES_CTES = f"""    qbase AS (
+_PIPE_STAGES_CTES = (
+    f"""    qbase AS (
         SELECT doc_id, text,
-               len(list_filter(string_split(text, ' '), w -> w != '')) AS n_words,
-               length(text) AS n_chars,
-               length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha,
-               len(list_filter(string_split(text, ' '),
-                   w -> w IN ('the','a','and','of','to','in','is'))) AS n_stop
+               {_QUALITY_INPUTS}
         FROM documents
     ),
     q AS (
         SELECT doc_id, text,
-               (CASE WHEN n_words >= 10 THEN 0.25 ELSE 0.0 END)
-               + (n_alpha / n_chars) * 0.25
-               + (n_stop / n_words) * 0.25
-               + (CASE WHEN (n_chars - (n_words - 1)) / n_words >= 3
-                        AND (n_chars - (n_words - 1)) / n_words <= 10
-                  THEN 0.25 ELSE 0.0 END) AS quality_score
+               {_QUALITY_SCORE} AS quality_score
         FROM qbase
     ),
     gated AS (SELECT * FROM q WHERE quality_score >= 0.5),
@@ -241,35 +249,13 @@ _PIPE_STAGES_CTES = f"""    qbase AS (
         SELECT DISTINCT doc_id AS id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS g
         FROM w, UNNEST(generate_series(1, len(ws) - 2)) AS t(i)
     ),
-    sig AS (SELECT id, {_PIPE_MINHASH} FROM sh GROUP BY id),
-    bands AS (
-        SELECT id, 0 AS band, mh0 || '_' || mh1 AS key FROM sig
-        UNION ALL SELECT id, 1, mh2 || '_' || mh3 FROM sig
-        UNION ALL SELECT id, 2, mh4 || '_' || mh5 FROM sig
-        UNION ALL SELECT id, 3, mh6 || '_' || mh7 FROM sig
-    ),
-    bands_capped AS (
-        SELECT id, band, key FROM bands
-        QUALIFY COUNT(*) OVER (PARTITION BY band, key) <= 1000
-    ),
-    cand AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands_capped a JOIN bands_capped b ON a.band = b.band AND a.key = b.key AND a.id < b.id
-    ),
-    sizes AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
-    common AS (
-        SELECT c.id_a, c.id_b, COUNT(*) AS common
-        FROM cand c
-        JOIN sh a ON a.id = c.id_a
-        JOIN sh b ON b.id = c.id_b AND b.g = a.g
-        GROUP BY c.id_a, c.id_b
-    ),
-    losers AS (
-        SELECT DISTINCT id_b AS doc_id FROM common
-        JOIN sizes sa ON sa.id = id_a
-        JOIN sizes sb ON sb.id = id_b
-        WHERE common / (sa.n + sb.n - common) >= 0.5
-    )"""
+    sig AS (SELECT id, {_MINHASH_MINS} FROM sh GROUP BY id),"""
+    + _MINHASH_CAND_CTE
+    + ","
+    + _shared_shingles_cte()
+    + ","
+    + _jaccard_pairs_cte("losers", "common", cols="DISTINCT id_b AS doc_id")
+)
 
 
 @query(
@@ -463,19 +449,27 @@ def tx_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return X.repetition_stats(docs)
 
 
-@query(
-    "tx_boilerplate_ngrams",
-    oracle="""
-    WITH w AS (
+def _bigrams_cte(col: str = "u AS g") -> str:
+    """``w`` (the non-empty words of each document) and ``g`` (each
+    document's distinct adjacent word pairs ``u``, selected as ``col``)."""
+    return f"""
+    w AS (
         SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
         FROM documents
     ),
     g AS (
-        SELECT DISTINCT doc_id, u AS g
+        SELECT DISTINCT doc_id, {col}
         FROM w, UNNEST(CASE WHEN len(ws) < 2 THEN []
                             ELSE list_transform(range(1, len(ws)),
                                                 i -> ws[i] || ' ' || ws[i+1]) END) AS t(u)
-    )
+    )"""
+
+
+@query(
+    "tx_boilerplate_ngrams",
+    oracle="WITH "
+    + _bigrams_cte()
+    + """
     SELECT g, COUNT(*) AS n_docs
     FROM g GROUP BY g HAVING COUNT(*) >= 35
     """,
@@ -491,17 +485,9 @@ def tx_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_contamination",
-    oracle="""
-    WITH w AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
-        FROM documents
-    ),
-    g AS (
-        SELECT DISTINCT doc_id, u AS g
-        FROM w, UNNEST(CASE WHEN len(ws) < 2 THEN []
-                            ELSE list_transform(range(1, len(ws)),
-                                                i -> ws[i] || ' ' || ws[i+1]) END) AS t(u)
-    ),
+    oracle="WITH "
+    + _bigrams_cte()
+    + """,
     probe AS (SELECT DISTINCT g FROM g WHERE doc_id < 10)
     SELECT doc_id, COUNT(*) AS n_grams,
            CAST(SUM(CASE WHEN probe.g IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_contaminated,
@@ -753,24 +739,15 @@ def tx_tfidf_density(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "tx_corpus_report",
     bench=False,
-    oracle="""
+    oracle=f"""
     WITH base AS (
         SELECT lang, source,
-               len(list_filter(string_split(text, ' '), w -> w != '')) AS n_words,
-               length(text) AS n_chars,
-               length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha,
-               len(list_filter(string_split(text, ' '),
-                   w -> w IN ('the','a','and','of','to','in','is'))) AS n_stop
+               {_QUALITY_INPUTS}
         FROM documents
     ),
     scored AS (
         SELECT lang, source, n_words,
-               (CASE WHEN n_words >= 10 THEN 0.25 ELSE 0.0 END)
-               + (n_alpha / n_chars) * 0.25
-               + (n_stop / n_words) * 0.25
-               + (CASE WHEN (n_chars - (n_words - 1)) / n_words >= 3
-                        AND (n_chars - (n_words - 1)) / n_words <= 10
-                  THEN 0.25 ELSE 0.0 END) AS q
+               {_QUALITY_SCORE} AS q
         FROM base
     )
     SELECT lang, source,
@@ -1122,24 +1099,15 @@ def tx_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_quality_calibrated",
-    oracle="""
+    oracle=f"""
     WITH qbase AS (
         SELECT doc_id, source,
-               len(list_filter(string_split(text, ' '), w -> w != '')) AS n_words,
-               length(text) AS n_chars,
-               length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha,
-               len(list_filter(string_split(text, ' '),
-                   w -> w IN ('the','a','and','of','to','in','is'))) AS n_stop
+               {_QUALITY_INPUTS}
         FROM documents
     ),
     q AS (
         SELECT doc_id, source,
-               (CASE WHEN n_words >= 10 THEN 0.25 ELSE 0.0 END)
-               + (n_alpha / n_chars) * 0.25
-               + (n_stop / n_words) * 0.25
-               + (CASE WHEN (n_chars - (n_words - 1)) / n_words >= 3
-                        AND (n_chars - (n_words - 1)) / n_words <= 10
-                  THEN 0.25 ELSE 0.0 END) AS quality_score
+               {_QUALITY_SCORE} AS quality_score
         FROM qbase
     )
     SELECT doc_id, source, ROUND(quality_score, 6) AS raw_quality,
@@ -1350,26 +1318,41 @@ def tx_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "mm_audio_rms",
-    oracle="""
-    WITH p AS (
+# shared oracle CTE: each document's bytes read as a 16-bit PCM clip
+_AUDIO_P_CTE = """
+    p AS (
         SELECT doc_id, text, length(text) AS n,
                (length(text) % 2 + 1) AS channels,
                (length(text) % 500 + 1) AS frames
         FROM documents
-    ),
+    )"""
+
+
+def _audio_pcm_cte(keep: str = "", alias: str = "") -> str:
+    """``p`` (channels and frames per document), ``s`` (each sample as an
+    unsigned little-endian 16-bit value) and ``v`` (signed); every sample
+    row also carries ``keep`` as ``alias``."""
+    s_keep = f" {keep} AS {alias}," if alias else ""
+    v_keep = f" {alias}," if alias else ""
+    return _AUDIO_P_CTE + f""",
     s AS (
-        SELECT doc_id, frames * channels AS n_int16,
+        SELECT doc_id,{s_keep}
                ascii(substring(text, ((2 * t.j) % n) + 1, 1))
                + 256 * ascii(substring(text, ((2 * t.j + 1) % n) + 1, 1)) AS u
         FROM p, UNNEST(generate_series(0, frames * channels - 1)) AS t(j)
     ),
     v AS (
-        SELECT doc_id, n_int16,
+        SELECT doc_id,{v_keep}
                CASE WHEN u >= 32768 THEN u - 65536 ELSE u END AS v
         FROM s
-    )
+    )"""
+
+
+@query(
+    "mm_audio_rms",
+    oracle="WITH "
+    + _audio_pcm_cte("frames * channels", "n_int16")
+    + """
     SELECT doc_id, CAST(MAX(n_int16) AS BIGINT) AS n_int16,
            CAST(MAX(ABS(v)) AS INTEGER) AS peak,
            ROUND(SQRT(CAST(SUM(CAST(v AS BIGINT) * v) AS DOUBLE)
@@ -1399,10 +1382,9 @@ def mm_audio_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "mm_pixel_stats",
-    oracle="""
-    WITH p AS (
+# shared oracle CTEs: each document's bytes read as a 24-bit bitmap
+_BMP_GEO_CTE = """
+    p AS (
         SELECT doc_id, text, length(text) AS n,
                length(text) % 64 + 1 AS w,
                length(text) % 48 + 1 AS h
@@ -1412,15 +1394,29 @@ def mm_audio_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, text, n, w, h,
                w * 3 + (4 - (w * 3) % 4) % 4 AS stride
         FROM p
-    ),
+    )"""
+
+
+def _bmp_pixels_cte(*cols: str) -> str:
+    """``p`` (bitmap width and height per document), ``geo`` (its padded
+    row stride) and ``px`` (one byte per pixel channel, also carrying
+    ``cols``)."""
+    return _BMP_GEO_CTE + f""",
     px AS (
-        SELECT doc_id, w, h, t.j % 3 AS ch,
+        SELECT doc_id,{"".join(f" {c}," for c in cols)}
                ascii(substring(text,
                    (((t.j // (3 * w)) * stride
                      + ((t.j // 3) % w) * 3
                      + t.j % 3) % n) + 1, 1)) AS b
         FROM geo, UNNEST(generate_series(0, h * w * 3 - 1)) AS t(j)
-    )
+    )"""
+
+
+@query(
+    "mm_pixel_stats",
+    oracle="WITH "
+    + _bmp_pixels_cte("w", "h", "t.j % 3 AS ch")
+    + """
     SELECT doc_id, CAST(MAX(w) AS INTEGER) AS width,
            CAST(MAX(h) AS INTEGER) AS height,
            CAST(MAX(w) * MAX(h) AS BIGINT) AS n_pixels,
@@ -1458,17 +1454,23 @@ def mm_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "mm_resize_real",
-    oracle="""
-    WITH geo AS (
+# shared oracle CTE: bitmap width, height and padded row stride per document
+_GEO_CTE = """
+    geo AS (
         SELECT doc_id, text, length(text) AS n,
                length(text) % 64 + 1 AS w,
                length(text) % 48 + 1 AS h,
                (length(text) % 64 + 1) * 3
                + (4 - ((length(text) % 64 + 1) * 3) % 4) % 4 AS stride
         FROM documents
-    ),
+    )"""
+
+
+@query(
+    "mm_resize_real",
+    oracle="WITH "
+    + _GEO_CTE
+    + """,
     cells AS (
         SELECT doc_id, t.j AS j,
                ascii(substring(text,
@@ -1495,10 +1497,12 @@ def mm_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     return M.resize_bmp_nearest(M.encode_bmp(docs), out_w=4, out_h=3)
 
 
-@query(
-    "mm_frame_index",
-    oracle="""
-    WITH p AS (
+def _frame_bytes_cte(where: str = "") -> str:
+    """``p`` (samples per document), ``s`` (each sample's offset and size,
+    filtered by ``where``) and ``b`` (one row per sample byte) of the
+    synthetic video stream."""
+    return f"""
+    p AS (
         SELECT doc_id, text, length(text) AS n,
                length(text) % 24 + 1 AS ns
         FROM documents
@@ -1506,14 +1510,20 @@ def mm_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     s AS (
         SELECT doc_id, text, n, t.i AS i, (t.i % 7) + 1 AS size_i,
                28 * (t.i // 7) + ((t.i % 7) * ((t.i % 7) + 1)) // 2 AS p0
-        FROM p, UNNEST(generate_series(0, ns - 1)) AS t(i)
-        WHERE t.i % 3 = 0
+        FROM p, UNNEST(generate_series(0, ns - 1)) AS t(i){where}
     ),
     b AS (
         SELECT doc_id, i, size_i, p0 + u.j AS off,
                ascii(substring(text, ((p0 + u.j) % n) + 1, 1)) AS byte
         FROM s, UNNEST(generate_series(0, size_i - 1)) AS u(j)
-    )
+    )"""
+
+
+@query(
+    "mm_frame_index",
+    oracle="WITH "
+    + _frame_bytes_cte("\n        WHERE t.i % 3 = 0")
+    + """
     SELECT doc_id, CAST(i AS INTEGER) AS sample_idx,
            CAST(size_i AS INTEGER) AS size,
            md5(string_agg(CAST(byte AS VARCHAR), ',' ORDER BY off)) AS digest
@@ -1537,24 +1547,15 @@ def mm_frame_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_source_cap",
-    oracle="""
+    oracle=f"""
     WITH base AS (
         SELECT doc_id, source,
-               len(list_filter(string_split(text, ' '), w -> w != '')) AS n_words,
-               length(text) AS n_chars,
-               length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha,
-               len(list_filter(string_split(text, ' '),
-                   w -> w IN ('the','a','and','of','to','in','is'))) AS n_stop
+               {_QUALITY_INPUTS}
         FROM documents
     ),
     q AS (
         SELECT doc_id, source,
-               (CASE WHEN n_words >= 10 THEN 0.25 ELSE 0.0 END)
-               + (n_alpha / n_chars) * 0.25
-               + (n_stop / n_words) * 0.25
-               + (CASE WHEN (n_chars - (n_words - 1)) / n_words >= 3
-                        AND (n_chars - (n_words - 1)) / n_words <= 10
-                  THEN 0.25 ELSE 0.0 END) AS quality_score
+               {_QUALITY_SCORE} AS quality_score
         FROM base
     ),
     r AS (
@@ -1588,15 +1589,9 @@ def tx_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the same stride arithmetic as encode_bmp/synth_bmp, then fold the 56
 # horizontal-neighbor bits into one BIGINT.  Shared by mm_dhash and
 # mm_dhash_pairs so the pair oracle pins the identical hash definition.
-_DHASH_CTE = """
-    geo AS (
-        SELECT doc_id, text, length(text) AS n,
-               length(text) % 64 + 1 AS w,
-               length(text) % 48 + 1 AS h,
-               (length(text) % 64 + 1) * 3
-               + (4 - ((length(text) % 64 + 1) * 3) % 4) % 4 AS stride
-        FROM documents
-    ),
+_DHASH_CTE = (
+    _GEO_CTE
+    + """,
     cellbytes AS (
         SELECT doc_id, t.j // 27 AS r, (t.j // 3) % 9 AS c,
                ascii(substring(text,
@@ -1621,6 +1616,7 @@ _DHASH_CTE = """
                CAST(SUM(CAST(bit AS BIGINT) << (r * 8 + c)) AS BIGINT) AS dhash
         FROM bits GROUP BY doc_id
     )"""
+)
 
 
 @query(
@@ -1640,27 +1636,34 @@ def mm_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return M.dhash_bmp(M.encode_bmp(docs))
 
 
-@query(
-    "mm_dhash_pairs",
-    oracle="WITH " + _DHASH_CTE + """,
+def _hash_band_pairs_sql(src: str, col: str, width: int, n_bands: int) -> str:
+    """Band the 64-bit ``col`` of ``src`` into ``n_bands`` keys of ``width``
+    bits (buckets capped at 1000), then the candidate pairs within
+    hamming 6."""
+    return f"""
     bands AS (
-        SELECT doc_id, dhash, t.b AS band,
-               (dhash >> (t.b * 14)) & 16383 AS key
-        FROM dh, UNNEST(generate_series(0, 3)) AS t(b)
+        SELECT doc_id, {col}, t.b AS band,
+               ({col} >> (t.b * {width})) & {(1 << width) - 1} AS key
+        FROM {src}, UNNEST(generate_series(0, {n_bands - 1})) AS t(b)
     ),
     capped AS (
-        SELECT doc_id, dhash, band, key FROM bands
+        SELECT doc_id, {col}, band, key FROM bands
         QUALIFY COUNT(*) OVER (PARTITION BY band, key) <= 1000
     ),
     cand AS (
         SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-               a.dhash AS ha, b.dhash AS hb
+               a.{col} AS ha, b.{col} AS hb
         FROM capped a JOIN capped b
           ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
     )
     SELECT id_a, id_b, CAST(bit_count(xor(ha, hb)) AS INTEGER) AS hamming
     FROM cand WHERE bit_count(xor(ha, hb)) <= 6
-    """,
+    """
+
+
+@query(
+    "mm_dhash_pairs",
+    oracle="WITH " + _DHASH_CTE + "," + _hash_band_pairs_sql("dh", "dhash", 14, 4),
 )
 def mm_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-duplicate pairs: banded pigeonhole over the 56-bit
@@ -1711,10 +1714,10 @@ def tx_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "tx_hash_embed",
-    oracle="""
-    WITH toks AS (
+# shared oracle CTEs: signed 16-bucket feature hashing of each document's
+# words, densified over every document
+_HASH_EMBED_CTE = """
+    toks AS (
         SELECT doc_id,
                CAST('0x' || substring(md5(w), 1, 15) AS BIGINT) AS h1
         FROM documents,
@@ -1731,7 +1734,14 @@ def tx_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM (SELECT DISTINCT doc_id FROM documents) d
         CROSS JOIN (SELECT UNNEST(generate_series(0, 15)) AS b) g
         LEFT JOIN sums ON sums.doc_id = d.doc_id AND sums.bucket = g.b
-    ),
+    )"""
+
+
+@query(
+    "tx_hash_embed",
+    oracle="WITH "
+    + _HASH_EMBED_CTE
+    + """,
     norms AS (
         SELECT doc_id, SUM(v * v) AS nsq,
                SUM(CASE WHEN v != 0 THEN 1 ELSE 0 END) AS nnz_dense
@@ -1770,25 +1780,9 @@ def tx_hash_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_text_ann",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id,
-               CAST('0x' || substring(md5(w), 1, 15) AS BIGINT) AS h1
-        FROM documents,
-             UNNEST(list_filter(string_split(text, ' '), x -> x != '')) AS t(w)
-    ),
-    sums AS (
-        SELECT doc_id, h1 % 16 AS bucket,
-               SUM(CASE WHEN h1 % 32 < 16 THEN 1 ELSE -1 END) AS s
-        FROM toks GROUP BY doc_id, h1 % 16
-    ),
-    dense AS (
-        SELECT d.doc_id, g.b AS bucket,
-               CAST(COALESCE(sums.s, 0) AS DOUBLE) AS v
-        FROM (SELECT DISTINCT doc_id FROM documents) d
-        CROSS JOIN (SELECT UNNEST(generate_series(0, 15)) AS b) g
-        LEFT JOIN sums ON sums.doc_id = d.doc_id AND sums.bucket = g.b
-    ),
+    oracle="WITH "
+    + _HASH_EMBED_CTE
+    + """,
     norms AS (SELECT doc_id, SUM(v * v) AS nsq FROM dense GROUP BY doc_id),
     unit AS (
         SELECT dense.doc_id, bucket,
@@ -2237,22 +2231,9 @@ def tx_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mm_scene_cut",
-    oracle="""
-    WITH p AS (
-        SELECT doc_id, text, length(text) AS n,
-               length(text) % 24 + 1 AS ns
-        FROM documents
-    ),
-    s AS (
-        SELECT doc_id, text, n, t.i AS i, (t.i % 7) + 1 AS size_i,
-               28 * (t.i // 7) + ((t.i % 7) * ((t.i % 7) + 1)) // 2 AS p0
-        FROM p, UNNEST(generate_series(0, ns - 1)) AS t(i)
-    ),
-    b AS (
-        SELECT doc_id, i, size_i, p0 + u.j AS off,
-               ascii(substring(text, ((p0 + u.j) % n) + 1, 1)) AS byte
-        FROM s, UNNEST(generate_series(0, size_i - 1)) AS u(j)
-    ),
+    oracle="WITH "
+    + _frame_bytes_cte()
+    + """,
     d AS (
         SELECT doc_id, i,
                CAST('0x' || substring(
@@ -2335,18 +2316,9 @@ def tx_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_novelty",
-    oracle="""
-    WITH w AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
-        FROM documents
-    ),
-    g AS (
-        SELECT DISTINCT doc_id,
-               CAST('0x' || substring(md5(u), 1, 15) AS BIGINT) AS gh
-        FROM w, UNNEST(CASE WHEN len(ws) < 2 THEN []
-                            ELSE list_transform(range(1, len(ws)),
-                                                i -> ws[i] || ' ' || ws[i+1]) END) AS t(u)
-    ),
+    oracle="WITH "
+    + _bigrams_cte("CAST('0x' || substring(md5(u), 1, 15) AS BIGINT) AS gh")
+    + """,
     f AS (
         SELECT doc_id, gh,
                CASE WHEN doc_id = MIN(doc_id) OVER (PARTITION BY gh)
@@ -2434,22 +2406,9 @@ def tx_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mm_video_neardup",
-    oracle="""
-    WITH p AS (
-        SELECT doc_id, text, length(text) AS n,
-               length(text) % 24 + 1 AS ns
-        FROM documents
-    ),
-    s AS (
-        SELECT doc_id, text, n, t.i AS i, (t.i % 7) + 1 AS size_i,
-               28 * (t.i // 7) + ((t.i % 7) * ((t.i % 7) + 1)) // 2 AS p0
-        FROM p, UNNEST(generate_series(0, ns - 1)) AS t(i)
-    ),
-    b AS (
-        SELECT doc_id, i, size_i, p0 + u.j AS off,
-               ascii(substring(text, ((p0 + u.j) % n) + 1, 1)) AS byte
-        FROM s, UNNEST(generate_series(0, size_i - 1)) AS u(j)
-    ),
+    oracle="WITH "
+    + _frame_bytes_cte()
+    + """,
     d AS (
         SELECT doc_id, i,
                md5(string_agg(CAST(byte AS VARCHAR), ',' ORDER BY off)) AS g
@@ -2459,40 +2418,8 @@ def tx_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT DISTINCT doc_id AS id,
                CAST('0x' || substring(md5(g), 1, 15) AS BIGINT) AS gh
         FROM d
-    ),
-    dftab AS (SELECT gh, COUNT(*) AS df FROM shh GROUP BY gh),
-    sized AS (
-        SELECT id, gh,
-               ROW_NUMBER() OVER (PARTITION BY id ORDER BY df, gh) AS rn,
-               COUNT(*) OVER (PARTITION BY id) AS sz
-        FROM shh JOIN dftab USING (gh)
-    ),
-    prefix AS (
-        SELECT id, gh, sz, rn FROM sized WHERE rn <= sz - (3 * sz + 4) // 5 + 1
-    ),
-    cand AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM prefix a JOIN prefix b ON a.gh = b.gh AND a.id < b.id
-        WHERE 5 * b.sz >= 3 * a.sz AND 5 * a.sz >= 3 * b.sz
-          AND 1 + LEAST(a.sz - a.rn, b.sz - b.rn)
-              >= (3 * (a.sz + b.sz) + 7) // 8
-    ),
-    inter AS (
-        SELECT c.id_a, c.id_b, COUNT(*) AS n_inter
-        FROM cand c
-        JOIN shh ta ON ta.id = c.id_a
-        JOIN shh tb ON tb.id = c.id_b AND tb.gh = ta.gh
-        GROUP BY c.id_a, c.id_b
-    ),
-    szs AS (SELECT id, COUNT(*) AS sz FROM shh GROUP BY id)
-    SELECT i.id_a, i.id_b, CAST(n_inter AS BIGINT) AS n_inter,
-           ROUND(CAST(n_inter AS DOUBLE) / (sa.sz + sb.sz - n_inter), 6)
-               AS jaccard
-    FROM inter i
-    JOIN szs sa ON sa.id = i.id_a
-    JOIN szs sb ON sb.id = i.id_b
-    WHERE ROUND(CAST(n_inter AS DOUBLE) / (sa.sz + sb.sz - n_inter), 6) >= 0.6
-    """,
+    ),"""
+    + _prefix_jaccard_sql(3, 5),
 )
 def mm_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-modal near-duplicate VIDEO detection: real MP4 sample
@@ -2519,24 +2446,9 @@ def mm_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mm_audio_neardup",
-    oracle="""
-    WITH p AS (
-        SELECT doc_id, text, length(text) AS n,
-               (length(text) % 2 + 1) AS channels,
-               (length(text) % 500 + 1) AS frames
-        FROM documents
-    ),
-    s AS (
-        SELECT doc_id, t.j AS j,
-               ascii(substring(text, ((2 * t.j) % n) + 1, 1))
-               + 256 * ascii(substring(text, ((2 * t.j + 1) % n) + 1, 1)) AS u
-        FROM p, UNNEST(generate_series(0, frames * channels - 1)) AS t(j)
-    ),
-    v AS (
-        SELECT doc_id, j,
-               CASE WHEN u >= 32768 THEN u - 65536 ELSE u END AS v
-        FROM s
-    ),
+    oracle="WITH "
+    + _audio_pcm_cte("t.j", "j")
+    + """,
     w AS (
         SELECT doc_id, j // 64 AS widx,
                SUM(CAST(v AS BIGINT) * v) AS energy
@@ -2552,40 +2464,8 @@ def mm_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                           AS BIGINT) AS VARCHAR)), 1, 15)
                  AS BIGINT) AS gh
         FROM w
-    ),
-    dftab AS (SELECT gh, COUNT(*) AS df FROM shh GROUP BY gh),
-    sized AS (
-        SELECT id, gh,
-               ROW_NUMBER() OVER (PARTITION BY id ORDER BY df, gh) AS rn,
-               COUNT(*) OVER (PARTITION BY id) AS sz
-        FROM shh JOIN dftab USING (gh)
-    ),
-    prefix AS (
-        SELECT id, gh, sz, rn FROM sized WHERE rn <= sz - (4 * sz + 4) // 5 + 1
-    ),
-    cand AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM prefix a JOIN prefix b ON a.gh = b.gh AND a.id < b.id
-        WHERE 5 * b.sz >= 4 * a.sz AND 5 * a.sz >= 4 * b.sz
-          AND 1 + LEAST(a.sz - a.rn, b.sz - b.rn)
-              >= (4 * (a.sz + b.sz) + 8) // 9
-    ),
-    inter AS (
-        SELECT c.id_a, c.id_b, COUNT(*) AS n_inter
-        FROM cand c
-        JOIN shh ta ON ta.id = c.id_a
-        JOIN shh tb ON tb.id = c.id_b AND tb.gh = ta.gh
-        GROUP BY c.id_a, c.id_b
-    ),
-    szs AS (SELECT id, COUNT(*) AS sz FROM shh GROUP BY id)
-    SELECT i.id_a, i.id_b, CAST(n_inter AS BIGINT) AS n_inter,
-           ROUND(CAST(n_inter AS DOUBLE) / (sa.sz + sb.sz - n_inter), 6)
-               AS jaccard
-    FROM inter i
-    JOIN szs sa ON sa.id = i.id_a
-    JOIN szs sb ON sb.id = i.id_b
-    WHERE ROUND(CAST(n_inter AS DOUBLE) / (sa.sz + sb.sz - n_inter), 6) >= 0.8
-    """,
+    ),"""
+    + _prefix_jaccard_sql(4, 5),
 )
 def mm_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio near-duplicate detection, the WAV sibling of
@@ -2606,7 +2486,9 @@ def mm_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return prefix_jaccard_pairs(sh, threshold=0.8)
 
 
-_LM_CTE = """
+# shared oracle CTEs: each document's words, its adjacent word pairs, and
+# the corpus pair and context counts
+_BIGRAM_COUNTS_CTE = """
     w AS (
         SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '') AS ws
         FROM documents
@@ -2617,7 +2499,11 @@ _LM_CTE = """
         WHERE len(ws) >= 2
     ),
     cab AS (SELECT a, b, COUNT(*) AS cab FROM bg GROUP BY a, b),
-    ctx AS (SELECT a, COUNT(*) AS ctx FROM bg GROUP BY a),
+    ctx AS (SELECT a, COUNT(*) AS ctx FROM bg GROUP BY a)"""
+
+_LM_CTE = (
+    _BIGRAM_COUNTS_CTE
+    + """,
     vocab AS (
         SELECT COUNT(DISTINCT w) AS v
         FROM (SELECT UNNEST(ws) AS w FROM w)
@@ -2634,6 +2520,7 @@ _LM_CTE = """
         FROM terms GROUP BY doc_id
     )
 """
+)
 
 
 @query(
@@ -2805,24 +2692,9 @@ def tx_curation_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mm_audio_vad",
-    oracle="""
-    WITH p AS (
-        SELECT doc_id, text, length(text) AS n,
-               (length(text) % 2 + 1) AS channels,
-               (length(text) % 500 + 1) AS frames
-        FROM documents
-    ),
-    s AS (
-        SELECT doc_id, (t.j // 64) AS frame_idx,
-               ascii(substring(text, ((2 * t.j) % n) + 1, 1))
-               + 256 * ascii(substring(text, ((2 * t.j + 1) % n) + 1, 1)) AS u
-        FROM p, UNNEST(generate_series(0, frames * channels - 1)) AS t(j)
-    ),
-    v AS (
-        SELECT doc_id, frame_idx,
-               CASE WHEN u >= 32768 THEN u - 65536 ELSE u END AS v
-        FROM s
-    ),
+    oracle="WITH "
+    + _audio_pcm_cte("(t.j // 64)", "frame_idx")
+    + """,
     f AS (
         SELECT doc_id, frame_idx, COUNT(*) AS nf,
                SUM(CAST(v AS BIGINT) * v) AS ss
@@ -2870,18 +2742,9 @@ def mm_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_kneser_ney_score",
-    oracle="""
-    WITH w AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '') AS ws
-        FROM documents
-    ),
-    bg AS (
-        SELECT doc_id, ws[i] AS a, ws[i+1] AS b
-        FROM w, UNNEST(generate_series(1, len(ws) - 1)) AS t(i)
-        WHERE len(ws) >= 2
-    ),
-    cab AS (SELECT a, b, COUNT(*) AS cab FROM bg GROUP BY a, b),
-    ctx AS (SELECT a, COUNT(*) AS ctx FROM bg GROUP BY a),
+    oracle="WITH "
+    + _BIGRAM_COUNTS_CTE
+    + """,
     types AS (SELECT DISTINCT a, b FROM bg),
     n1a AS (SELECT a, COUNT(*) AS n1a FROM types GROUP BY a),
     n1b AS (SELECT b, COUNT(*) AS n1b FROM types GROUP BY b),
@@ -2957,24 +2820,9 @@ def tx_ccnet_lang_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mm_audio_clipping",
-    oracle="""
-    WITH p AS (
-        SELECT doc_id, text, length(text) AS n,
-               (length(text) % 2 + 1) AS channels,
-               (length(text) % 500 + 1) AS frames
-        FROM documents
-    ),
-    s AS (
-        SELECT doc_id,
-               ascii(substring(text, ((2 * t.j) % n) + 1, 1))
-               + 256 * ascii(substring(text, ((2 * t.j + 1) % n) + 1, 1)) AS u
-        FROM p, UNNEST(generate_series(0, frames * channels - 1)) AS t(j)
-    ),
-    v AS (
-        SELECT doc_id,
-               CASE WHEN u >= 32768 THEN u - 65536 ELSE u END AS v
-        FROM s
-    ),
+    oracle="WITH "
+    + _audio_pcm_cte()
+    + """,
     pk AS (
         SELECT doc_id, COUNT(*) AS n_int16, MAX(ABS(v)) AS peak
         FROM v GROUP BY doc_id
@@ -3011,26 +2859,9 @@ def mm_audio_clipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mm_image_entropy",
-    oracle="""
-    WITH p AS (
-        SELECT doc_id, text, length(text) AS n,
-               length(text) % 64 + 1 AS w,
-               length(text) % 48 + 1 AS h
-        FROM documents
-    ),
-    geo AS (
-        SELECT doc_id, text, n, w, h,
-               w * 3 + (4 - (w * 3) % 4) % 4 AS stride
-        FROM p
-    ),
-    px AS (
-        SELECT doc_id,
-               ascii(substring(text,
-                   (((t.j // (3 * w)) * stride
-                     + ((t.j // 3) % w) * 3
-                     + t.j % 3) % n) + 1, 1)) AS b
-        FROM geo, UNNEST(generate_series(0, h * w * 3 - 1)) AS t(j)
-    ),
+    oracle="WITH "
+    + _bmp_pixels_cte()
+    + """,
     hist AS (
         SELECT doc_id, b AS val, CAST(COUNT(*) AS BIGINT) AS c
         FROM px GROUP BY doc_id, b
@@ -3078,10 +2909,10 @@ def mm_image_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "tx_naive_bayes",
-    oracle="""
-    WITH train AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
+# shared oracle CTEs: multinomial naive Bayes language scores, trained on
+# the even doc_ids and evaluated on the odd ones
+_NB_SCORES_CTE = """
+    train AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
     ev AS (SELECT * FROM documents WHERE doc_id % 2 = 1),
     tt AS (
         SELECT lang AS label, u AS w
@@ -3112,7 +2943,14 @@ def mm_image_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
                sc.s + CAST(ROUND(LN(pri.dl * 1.0 / (SELECT td FROM tot)), 6)
                            AS DECIMAL(18,6)) AS score
         FROM sc JOIN pri ON pri.label = sc.label
-    ),
+    )"""
+
+
+@query(
+    "tx_naive_bayes",
+    oracle="WITH "
+    + _NB_SCORES_CTE
+    + """,
     pred AS (
         SELECT doc_id, label, score,
                ROW_NUMBER() OVER (PARTITION BY doc_id
@@ -3256,15 +3094,9 @@ def tx_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mm_blur_score",
-    oracle="""
-    WITH geo AS (
-        SELECT doc_id, text, length(text) AS n,
-               length(text) % 64 + 1 AS w,
-               length(text) % 48 + 1 AS h,
-               (length(text) % 64 + 1) * 3
-               + (4 - ((length(text) % 64 + 1) * 3) % 4) % 4 AS stride
-        FROM documents
-    ),
+    oracle="WITH "
+    + _GEO_CTE
+    + """,
     gray AS (
         SELECT doc_id, w, h, t.pi // w AS r, t.pi % w AS c,
                ascii(substring(text,
@@ -3334,16 +3166,10 @@ _TONE_VALUES = ",\n               ".join(
     f"({k}, {n}, {c}, {s})" for (k, n, c, s) in M._tone_table()
 )
 
-
-@query(
-    "mm_audio_tone",
-    oracle=f"""
-    WITH p AS (
-        SELECT doc_id, text, length(text) AS n,
-               (length(text) % 2 + 1) AS channels,
-               (length(text) % 500 + 1) AS frames
-        FROM documents
-    ),
+# shared oracle CTEs: p, the DFT twiddle table and the signed samples
+_TONE_PCM_CTE = (
+    _AUDIO_P_CTE
+    + f""",
     tw(k, wn, c, sn) AS (
         VALUES {_TONE_VALUES}
     ),
@@ -3358,7 +3184,15 @@ _TONE_VALUES = ",\n               ".join(
                        AS u
             FROM p, UNNEST(generate_series(0, frames * channels - 1)) AS t(j)
         ) t
-    ),
+    )"""
+)
+
+
+@query(
+    "mm_audio_tone",
+    oracle="WITH "
+    + _TONE_PCM_CTE
+    + """,
     pre AS (
         SELECT x.doc_id, tw.k, x.nf, x.j // 64 AS fi,
                SUM(x.v * tw.c) AS re, SUM(x.v * tw.sn) AS im
@@ -3827,39 +3661,9 @@ def tx_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_nb_confusion",
-    oracle="""
-    WITH train AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
-    ev AS (SELECT * FROM documents WHERE doc_id % 2 = 1),
-    tt AS (
-        SELECT lang AS label, u AS w
-        FROM (SELECT lang, list_filter(string_split(text, ' '), x -> x != '') AS ws
-              FROM train), UNNEST(ws) AS t(u)
-    ),
-    cwl AS (SELECT label, w, COUNT(*) AS c FROM tt GROUP BY label, w),
-    nl AS (SELECT label, COUNT(*) AS n FROM tt GROUP BY label),
-    v AS (SELECT COUNT(DISTINCT w) AS v FROM tt),
-    pri AS (SELECT lang AS label, COUNT(*) AS dl FROM train GROUP BY lang),
-    tot AS (SELECT COUNT(*) AS td FROM train),
-    te AS (
-        SELECT doc_id, u AS w
-        FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '') AS ws
-              FROM ev), UNNEST(ws) AS t(u)
-    ),
-    sc AS (
-        SELECT te.doc_id, nl.label,
-               SUM(CAST(ROUND(LN((COALESCE(cwl.c, 0) + 1)
-                                 / (nl.n + (SELECT v FROM v))), 6)
-                        AS DECIMAL(18,6))) AS s
-        FROM te CROSS JOIN nl
-        LEFT JOIN cwl ON cwl.label = nl.label AND cwl.w = te.w
-        GROUP BY te.doc_id, nl.label
-    ),
-    fl AS (
-        SELECT sc.doc_id, sc.label,
-               sc.s + CAST(ROUND(LN(pri.dl * 1.0 / (SELECT td FROM tot)), 6)
-                           AS DECIMAL(18,6)) AS score
-        FROM sc JOIN pri ON pri.label = sc.label
-    ),
+    oracle="WITH "
+    + _NB_SCORES_CTE
+    + """,
     pred AS (
         SELECT doc_id, label AS pred_lang FROM (
             SELECT doc_id, label,
@@ -3899,28 +3703,9 @@ def tx_nb_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FP_LM_CTE = f"""
-    p AS (
-        SELECT doc_id, text, length(text) AS n,
-               (length(text) % 2 + 1) AS channels,
-               (length(text) % 500 + 1) AS frames
-        FROM documents
-    ),
-    tw(k, wn, c, sn) AS (
-        VALUES {_TONE_VALUES}
-    ),
-    v AS (
-        SELECT doc_id, t.j AS j,
-               CASE WHEN u >= 32768 THEN u - 65536 ELSE u END AS v,
-               (frames * channels) // 64 AS nf
-        FROM (
-            SELECT doc_id, frames, channels, t.j,
-                   ascii(substring(text, ((2 * t.j) % n) + 1, 1))
-                   + 256 * ascii(substring(text, ((2 * t.j + 1) % n) + 1, 1))
-                       AS u
-            FROM p, UNNEST(generate_series(0, frames * channels - 1)) AS t(j)
-        ) t
-    ),
+_FP_LM_CTE = (
+    _TONE_PCM_CTE
+    + """,
     pre AS (
         SELECT x.doc_id, tw.k, x.j // 64 AS fi,
                SUM(x.v * tw.c) AS re, SUM(x.v * tw.sn) AS im
@@ -3954,12 +3739,15 @@ _FP_LM_CTE = f"""
                CAST(((pk * 8 + p1) * 8 + p2) * 64 + oct AS BIGINT) AS l
         FROM lm0 WHERE p2 IS NOT NULL
     )"""
+)
 
 
-@query(
-    "mm_audio_fingerprint",
-    oracle=f"""
-    WITH {_FP_LM_CTE},
+def _landmark_votes_sql(probe_mod: int) -> str:
+    """Landmark matching over ``lm`` (doc_id, fi, l): index the landmarks
+    held by at most 64 documents, probe with the documents whose id is
+    ``probe_mod`` mod 10 (one frame late), and keep each probe's top 3
+    (document, offset) vote counts."""
+    return f"""
     freq AS (
         SELECT l FROM (
             SELECT l, COUNT(DISTINCT doc_id) AS nd FROM lm GROUP BY l
@@ -3968,7 +3756,7 @@ _FP_LM_CTE = f"""
     idx AS (SELECT lm.doc_id, lm.fi, lm.l FROM lm JOIN freq USING (l)),
     probe AS (
         SELECT doc_id AS probe_doc, fi - 1 AS pfi, l
-        FROM lm WHERE doc_id % 10 = 3 AND fi >= 1
+        FROM lm WHERE doc_id % 10 = {probe_mod} AND fi >= 1
     ),
     votes AS (
         SELECT p.probe_doc, c.doc_id AS matched_doc,
@@ -3984,7 +3772,12 @@ _FP_LM_CTE = f"""
                ) AS BIGINT) AS rank
         FROM votes
     ) WHERE rank <= 3
-    """,
+    """
+
+
+@query(
+    "mm_audio_fingerprint",
+    oracle="WITH " + _FP_LM_CTE + "," + _landmark_votes_sql(3),
 )
 def mm_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shazam-style constellation fingerprint matching over REAL decoded
@@ -4013,22 +3806,9 @@ def mm_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mm_video_align",
-    oracle="""
-    WITH p AS (
-        SELECT doc_id, text, length(text) AS n,
-               length(text) % 24 + 1 AS ns
-        FROM documents
-    ),
-    s AS (
-        SELECT doc_id, text, n, t.i AS i, (t.i % 7) + 1 AS size_i,
-               28 * (t.i // 7) + ((t.i % 7) * ((t.i % 7) + 1)) // 2 AS p0
-        FROM p, UNNEST(generate_series(0, ns - 1)) AS t(i)
-    ),
-    b AS (
-        SELECT doc_id, i, size_i, p0 + u.j AS off,
-               ascii(substring(text, ((p0 + u.j) % n) + 1, 1)) AS byte
-        FROM s, UNNEST(generate_series(0, size_i - 1)) AS u(j)
-    ),
+    oracle="WITH "
+    + _frame_bytes_cte()
+    + """,
     d AS (
         SELECT doc_id, i,
                md5(string_agg(CAST(byte AS VARCHAR), ',' ORDER BY off)) AS g
@@ -4038,32 +3818,8 @@ def mm_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, CAST(i AS BIGINT) AS fi,
                CAST('0x' || substring(md5(g), 1, 15) AS BIGINT) AS l
         FROM d
-    ),
-    freq AS (
-        SELECT l FROM (
-            SELECT l, COUNT(DISTINCT doc_id) AS nd FROM lm GROUP BY l
-        ) WHERE nd <= 64
-    ),
-    idx AS (SELECT lm.doc_id, lm.fi, lm.l FROM lm JOIN freq USING (l)),
-    probe AS (
-        SELECT doc_id AS probe_doc, fi - 1 AS pfi, l
-        FROM lm WHERE doc_id % 10 = 7 AND fi >= 1
-    ),
-    votes AS (
-        SELECT p.probe_doc, c.doc_id AS matched_doc,
-               c.fi - p.pfi AS "offset",
-               CAST(COUNT(*) AS BIGINT) AS votes
-        FROM probe p JOIN idx c ON c.l = p.l
-        GROUP BY 1, 2, 3
-    )
-    SELECT probe_doc, matched_doc, "offset", votes, rank FROM (
-        SELECT *, CAST(ROW_NUMBER() OVER (
-                   PARTITION BY probe_doc
-                   ORDER BY votes DESC, matched_doc ASC, "offset" ASC
-               ) AS BIGINT) AS rank
-        FROM votes
-    ) WHERE rank <= 3
-    """,
+    ),"""
+    + _landmark_votes_sql(7),
 )
 def mm_video_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal ALIGNMENT of video pairs by frame-digest offset voting —
@@ -4199,18 +3955,9 @@ _DCT_VALUES = ",\n               ".join(
 )
 
 
-_PHASH_CTE = f"""
-    p AS (
-        SELECT doc_id, text, length(text) AS n,
-               length(text) % 64 + 1 AS w,
-               length(text) % 48 + 1 AS h
-        FROM documents
-    ),
-    geo AS (
-        SELECT doc_id, text, n, w, h,
-               w * 3 + (4 - (w * 3) % 4) % 4 AS stride
-        FROM p
-    ),
+_PHASH_CTE = (
+    _BMP_GEO_CTE
+    + f""",
     gray AS (
         SELECT doc_id, w, h, t.j // w AS y, t.j % w AS x,
                (ascii(substring(text,
@@ -4269,6 +4016,7 @@ _PHASH_CTE = f"""
         FROM ac a JOIN med m ON m.doc_id = a.doc_id
         GROUP BY a.doc_id
     )"""
+)
 
 
 @query(
@@ -4295,25 +4043,7 @@ def mm_phash_dct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mm_phash_pairs",
-    oracle="WITH " + _PHASH_CTE + """,
-    bands AS (
-        SELECT doc_id, phash, t.b AS band,
-               (phash >> (t.b * 9)) & 511 AS key
-        FROM ph, UNNEST(generate_series(0, 6)) AS t(b)
-    ),
-    capped AS (
-        SELECT doc_id, phash, band, key FROM bands
-        QUALIFY COUNT(*) OVER (PARTITION BY band, key) <= 1000
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-               a.phash AS ha, b.phash AS hb
-        FROM capped a JOIN capped b
-          ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-    )
-    SELECT id_a, id_b, CAST(bit_count(xor(ha, hb)) AS INTEGER) AS hamming
-    FROM cand WHERE bit_count(xor(ha, hb)) <= 6
-    """,
+    oracle="WITH " + _PHASH_CTE + "," + _hash_band_pairs_sql("ph", "phash", 9, 7),
 )
 def mm_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spectral image near-duplicate pairs: banded pigeonhole over the
@@ -4713,6 +4443,33 @@ def tx_decontaminate_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_GRAM13 = (
+    "CAST('0x' || substring(md5("
+    "array_to_string(list_slice(ws, i, i + 12), ' ')"
+    "), 1, 15) AS BIGINT)"
+)
+
+
+def _contaminated_cte(w: str, where: str = "") -> str:
+    """``contaminated``: the documents of ``w`` (doc_id, ws) that share a
+    13-gram with the eval split (doc_id % 97 = 0); ``where`` narrows the
+    candidates."""
+    return f"""
+    ceg AS (
+        SELECT DISTINCT {_GRAM13} AS h
+        FROM {w}, UNNEST(generate_series(1, len(ws) - 12)) AS t(i)
+        WHERE doc_id % 97 = 0 AND len(ws) >= 13
+    ),
+    cdg AS (
+        SELECT DISTINCT doc_id, {_GRAM13} AS h
+        FROM {w}, UNNEST(generate_series(1, len(ws) - 12)) AS t(i)
+        WHERE doc_id % 97 != 0{where} AND len(ws) >= 13
+    ),
+    contaminated AS (
+        SELECT DISTINCT cdg.doc_id FROM cdg JOIN ceg ON ceg.h = cdg.h
+    )"""
+
+
 def _curation_pipeline_oracle() -> str:
     """The composed end-to-end curation oracle: the frozen ANN recall gate
     (sim_recall_floor's IVF-PQ vs brute-force arm), CCNet terciles
@@ -4721,47 +4478,8 @@ def _curation_pipeline_oracle() -> str:
     prefix sum (tx_pack_shards' window form) — stitched from the SAME CTE
     fragments the component oracles use, so a hash match certifies the
     composed row flow, not a re-derivation."""
-    from odbc2parquet_spark.queries.similarity import _DOT, _IVF_PQ_CTES
-
-    gram13 = (
-        "CAST('0x' || substring(md5("
-        "array_to_string(list_slice(ws, i, i + 12), ' ')"
-        "), 1, 15) AS BIGINT)"
-    )
     return f"""
-    WITH {_IVF_PQ_CTES},
-    n AS (
-        SELECT vec_id, embedding,
-               list_sum(list_transform(embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nsq
-        FROM embeddings
-    ),
-    exact_scored AS (
-        SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-               ROUND({_DOT} / SQRT(a.nsq * b.nsq), 4) AS cos4
-        FROM n a JOIN n b ON a.vec_id < 10 AND a.vec_id != b.vec_id
-    ),
-    exact_top AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY cos4 DESC, neighbor_id) AS rnk
-            FROM exact_scored
-        ) WHERE rnk <= 10
-    ),
-    adc_top AS (
-        SELECT query_id, vec_id AS neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY adc_dec, vec_id) AS rnk
-            FROM adc
-        ) WHERE rnk <= 10
-    ),
-    ghits AS (
-        SELECT a.query_id, COUNT(*) AS n_hits
-        FROM adc_top a
-        JOIN exact_top e ON e.query_id = a.query_id
-                        AND e.neighbor_id = a.neighbor_id
-        GROUP BY a.query_id
-    ),
+    WITH {_IVF_PQ_CTES},{_EXACT_TOP_CTE},{_adc_top_cte()},{_hits_cte("ghits")},
     per_q AS (
         SELECT q.query_id, COALESCE(h.n_hits, 0) AS n_hits
         FROM (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < 10) q
@@ -4779,19 +4497,7 @@ def _curation_pipeline_oracle() -> str:
                END AS bucket
         FROM lm
     ),
-    ceg AS (
-        SELECT DISTINCT {gram13} AS h
-        FROM w, UNNEST(generate_series(1, len(ws) - 12)) AS t(i)
-        WHERE doc_id % 97 = 0 AND len(ws) >= 13
-    ),
-    cdg AS (
-        SELECT DISTINCT doc_id, {gram13} AS h
-        FROM w, UNNEST(generate_series(1, len(ws) - 12)) AS t(i)
-        WHERE doc_id % 97 != 0 AND len(ws) >= 13
-    ),
-    contaminated AS (
-        SELECT DISTINCT cdg.doc_id FROM cdg JOIN ceg ON ceg.h = cdg.h
-    ),
+    {_contaminated_cte("w")},
     surv AS (
         SELECT b.doc_id, b.bucket, len(w.ws) AS n_tokens
         FROM buckets b JOIN w ON w.doc_id = b.doc_id
@@ -5039,48 +4745,9 @@ def _curation_delta_oracle() -> str:
     trained bigram LM + its frozen quality cutpoint, the eval 13-gram
     index, and the live IVF centroids (sim_ivf_delta_assign's CTEs) —
     stitched from the same fragments the component oracles use."""
-    from odbc2parquet_spark.queries.dedup import _SHINGLES_CTE, _minhash_min
-
-    mins = ", ".join(_minhash_min(j) for j in range(8))
-    gram13 = (
-        "CAST('0x' || substring(md5("
-        "array_to_string(list_slice(ws, i, i + 12), ' ')"
-        "), 1, 15) AS BIGINT)"
-    )
     return f"""
     WITH {_SHINGLES_CTE.format(where="")},
-    sig AS (SELECT id, {mins} FROM sh GROUP BY id),
-    bands AS (
-        SELECT id, 0 AS band, mh0 || '_' || mh1 AS key FROM sig
-        UNION ALL SELECT id, 1, mh2 || '_' || mh3 FROM sig
-        UNION ALL SELECT id, 2, mh4 || '_' || mh5 FROM sig
-        UNION ALL SELECT id, 3, mh6 || '_' || mh7 FROM sig
-    ),
-    bands_capped AS (
-        SELECT id, band, key FROM bands
-        QUALIFY COUNT(*) OVER (PARTITION BY band, key) <= 1000
-    ),
-    cand AS (
-        SELECT DISTINCT b.id AS new_id, a.id AS old_id
-        FROM bands_capped a
-        JOIN bands_capped b ON a.band = b.band AND a.key = b.key
-        WHERE a.id < 250 AND b.id >= 250
-    ),
-    sizes AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
-    common AS (
-        SELECT c.new_id, c.old_id, COUNT(*) AS common
-        FROM cand c
-        JOIN sh x ON x.id = c.new_id
-        JOIN sh y ON y.id = c.old_id AND y.g = x.g
-        GROUP BY c.new_id, c.old_id
-    ),
-    dropped AS (
-        SELECT DISTINCT common.new_id
-        FROM common
-        JOIN sizes sa ON sa.id = common.new_id
-        JOIN sizes sb ON sb.id = common.old_id
-        WHERE common / (sa.n + sb.n - common) >= 0.5
-    ),
+    sig AS (SELECT id, {_MINHASH_MINS} FROM sh GROUP BY id),{_INCREMENTAL_DROPPED_CTE},
     dedup_surv AS (
         SELECT doc_id FROM documents
         WHERE doc_id >= 250 AND doc_id NOT IN (SELECT new_id FROM dropped)
@@ -5140,19 +4807,7 @@ def _curation_delta_oracle() -> str:
           AND (s.avg_logprob > c.c2s
                OR (s.avg_logprob = c.c2s AND s.doc_id <= c.c2d))
     ),
-    ceg AS (
-        SELECT DISTINCT {gram13} AS h
-        FROM wq, UNNEST(generate_series(1, len(ws) - 12)) AS t(i)
-        WHERE doc_id % 97 = 0 AND len(ws) >= 13
-    ),
-    cdg AS (
-        SELECT DISTINCT doc_id, {gram13} AS h
-        FROM wq, UNNEST(generate_series(1, len(ws) - 12)) AS t(i)
-        WHERE doc_id % 97 != 0 AND doc_id >= 250 AND len(ws) >= 13
-    ),
-    contaminated AS (
-        SELECT DISTINCT cdg.doc_id FROM cdg JOIN ceg ON ceg.h = cdg.h
-    ),
+    {_contaminated_cte("wq", " AND doc_id >= 250")},
     cent AS (
         SELECT vec_id AS centroid_id, embedding AS centroid
         FROM embeddings WHERE vec_id < 400 ORDER BY vec_id LIMIT 16

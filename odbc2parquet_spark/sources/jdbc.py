@@ -5,9 +5,7 @@ The reference connects by DSN / connection string / interactive prompt and
 ships the SQL text to the remote DBMS. Spark's JDBC source is the same
 contract: the ``query`` option pushes the text verbatim to the remote
 engine, schema inference comes from ResultSetMetaData via the dialect
-(the reference's ConversionStrategy::new, conversion_strategy.rs:30-88),
-and partitioned reads replace the single background fetch thread
-(fetch_batch.rs:93-152) with N parallel range scans.
+(the reference's ConversionStrategy::new, conversion_strategy.rs:30-88).
 
 No JDBC driver jar ships in this container, so these helpers build the
 reader/writer configuration (testable) and fail with a clear message only
@@ -44,51 +42,17 @@ class ConnectOpts:
         return out
 
 
-def reader_for_query(
-    spark: SparkSession,
-    connect: ConnectOpts,
-    query: str,
-    *,
-    fetch_size: int = 65_535,
-    partition_column: str | None = None,
-    num_partitions: int | None = None,
-    lower_bound=None,
-    upper_bound=None,
-    custom_schema: str | None = None,
-):
-    """Configure a JDBC read of ``query``.
+#: rows per JDBC fetch: the reference's bulk batch (batch_size_limit.rs:6-15)
+FETCH_SIZE = 65_535
 
-    - ``fetch_size`` defaults to the reference's 65,535-row bulk batch
-      (batch_size_limit.rs:6-15).
-    - partition_column/num_partitions/bounds enable the parallel fetch the
-      reference approximates with double buffering; at cluster scale this
-      is N concurrent range-sliced cursors.
-    - ``custom_schema`` overrides inferred types (the §1 mapping layer,
-      e.g. '"ts" TIMESTAMP_NTZ, "d" DECIMAL(13,3)').
-    """
-    reader = (
+
+def read_query(spark: SparkSession, connect: ConnectOpts, query: str) -> DataFrame:
+    """Read ``query`` through one JDBC cursor; the text reaches the remote
+    engine verbatim."""
+    return (
         spark.read.format("jdbc")
         .options(**connect.to_options())
-        .option("fetchsize", fetch_size)
+        .option("fetchsize", FETCH_SIZE)
+        .option("query", query)
+        .load()
     )
-    if partition_column is not None:
-        # Spark's JDBC source rejects `query` + partitionColumn; the
-        # documented spelling for a partitioned arbitrary query is a
-        # derived-table dbtable: each of the N range-sliced cursors runs
-        # `SELECT * FROM (query) t WHERE partcol BETWEEN ...` remotely.
-        reader = (
-            reader.option("dbtable", f"({query}) o2p_part_q")
-            .option("partitionColumn", partition_column)
-            .option("numPartitions", num_partitions or 8)
-            .option("lowerBound", lower_bound)
-            .option("upperBound", upper_bound)
-        )
-    else:
-        reader = reader.option("query", query)
-    if custom_schema is not None:
-        reader = reader.option("customSchema", custom_schema)
-    return reader
-
-
-def read_query(spark: SparkSession, connect: ConnectOpts, query: str, **kw) -> DataFrame:
-    return reader_for_query(spark, connect, query, **kw).load()

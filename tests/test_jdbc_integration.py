@@ -19,7 +19,6 @@ import decimal
 
 import pytest
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from odbc2parquet_spark.sinks.writeback import insert_parquet
@@ -124,39 +123,6 @@ class TestDerbyRoundtrip:
         assert df.columns == ["i", "f"]
         got = df.collect()
         assert [(r["i"], r["f"]) for r in got] == [(42, 1.5)]
-
-    def test_partitioned_read(self, spark, derby_url):
-        """A5 concurrent fetch: partitionColumn splits the query into N
-        range-sliced cursors (the Spark analogue of the reference's
-        double-buffered background fetch, fetch_batch.rs:93-152)."""
-        src = spark.range(0, 1000).select(
-            F.col("id").cast("long").alias("k"),
-            (F.col("id") % 7).cast("long").alias("v"),
-        )
-        (
-            src.write.format("jdbc")
-            .mode("overwrite")
-            .option("url", derby_url)
-            .option("driver", DERBY_DRIVER)
-            .option("dbtable", "part_read")
-            .save()
-        )
-        df = read_query(
-            spark,
-            _connect(derby_url),
-            "SELECT * FROM part_read",
-            partition_column="k",
-            num_partitions=4,
-            lower_bound=0,
-            upper_bound=1000,
-        )
-        assert df.rdd.getNumPartitions() == 4
-        agg = df.agg(
-            F.count("*").alias("n"), F.sum("v").alias("sv")
-        ).collect()[0]
-        assert agg["n"] == 1000
-        # sum of id % 7 over 0..999
-        assert agg["sv"] == sum(i % 7 for i in range(1000))
 
     def test_append_accumulates(self, spark, derby_url, typed_parquet):
         """mode=append twice -> both generations present (reference insert

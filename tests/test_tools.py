@@ -45,3 +45,17 @@ def test_ab_spread_main(tool_env, capsys):
     for name in QUERIES:
         qmod = importlib.import_module(REGISTRY[name].__module__)
         assert qmod.load_table is catalog.load_table
+
+
+def test_check_correctness_rejects_unregistered_names_before_spark(monkeypatch):
+    from odbc2parquet_spark import session
+
+    def no_session(*a, **k):
+        raise AssertionError("a Spark session was started")
+
+    mod = importlib.import_module("tools.check_correctness")
+    monkeypatch.setattr(session, "get_spark", no_session)
+    argv = ["check_correctness.py", "/nonexistent", "q1_pricing_summary", "dd_minhas_lsh"]
+    monkeypatch.setattr(sys, "argv", argv)
+    with pytest.raises(SystemExit, match="not registered: dd_minhas_lsh$"):
+        mod.main()

@@ -67,6 +67,11 @@ def main() -> int:
     from odbc2parquet_spark.session import get_spark
     from odbc2parquet_spark.catalog import TABLES, table_path
 
+    qs = entrymod.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        raise SystemExit(f"not registered: {', '.join(unknown)}")
+
     spark = get_spark("correctness-check")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -77,7 +82,6 @@ def main() -> int:
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = 0
     for name, fn in qs.items():
