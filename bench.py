@@ -149,14 +149,23 @@ def reset(spark) -> None:
 
 def run_query(spark, name: str, sf_dir: str) -> float:
     """Build query ``name`` and write it to the noop sink under job
-    description ``name``; returns the wall seconds of both."""
+    description ``name``; returns the wall seconds of both. A failure
+    raises RuntimeError naming the query and the phase it failed in:
+    construct (building the DataFrame, eager actions included) or
+    execute (the write)."""
     from odbc2parquet_spark.queries import QUERIES
 
+    build = QUERIES[name]
     spark.sparkContext.setJobDescription(name)
+    phase = "construct"
     try:
         t0 = time.time()
-        QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+        df = build(spark, sf_dir)
+        phase = "execute"
+        df.write.mode("overwrite").format("noop").save()
         return time.time() - t0
+    except Exception as e:
+        raise RuntimeError(f"query {name} failed in {phase}: {e}") from e
     finally:
         spark.sparkContext.setJobDescription(None)
 

@@ -6,10 +6,10 @@ Scale notes (the point of doing this on Spark):
   aggregation map-side. Works at any scale; skew only if one document is
   duplicated millions of times (AQE skew-join handles the join-back).
 - MinHash+LSH is the linear-time near-dup path: shingle -> k min-hashes ->
-  band keys -> equi-join on band key. No quadratic candidate generation;
-  the only shuffles are the shingle distinct, the signature groupBy, and
-  the band self-join. Band-key skew (a band shared by millions of docs)
-  is the classic failure: cap bucket sizes before pairing.
+  band keys -> pairs within each (band, key) bucket, one shuffle in
+  similarity.capped_bucket_pairs. No quadratic candidate generation.
+  Band-key skew (a band shared by millions of docs) is the classic
+  failure: the bucket cap drops those buckets before pairing.
 - All-pairs n-gram Jaccard is quadratic — kept as the *verification*
   operator over LSH candidates or bounded subsets, never the scale path.
 - Hash functions are md5-derived (not Spark's murmur3) so the DuckDB
@@ -20,6 +20,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from odbc2parquet_spark.operators.similarity import (
+    band_melt,
+    banded_hamming_pairs,
+    cap_buckets,
+    capped_bucket_pairs,
+)
 
 # ---------------------------------------------------------------- exact
 
@@ -179,59 +186,24 @@ def word_shingle_stream(
     )
 
 
-def _band_melt(signatures: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
-    """Melt a signature row to ``bands`` (id, band, key) rows with ONE
-    explode (a union of per-band projections would recompute the
-    signature aggregation per branch)."""
-    entries = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "_", *[f"mh{b * rows_per_band + r}" for r in range(rows_per_band)]
-            ).alias("key"),
-        )
+def _minhash_keys(bands: int, rows_per_band: int) -> list[F.Column]:
+    """Band keys of a (id, mh0..) signature: ``rows_per_band`` min-hashes each."""
+    return [
+        F.concat_ws("_", *[f"mh{b * rows_per_band + r}" for r in range(rows_per_band)])
         for b in range(bands)
     ]
-    return signatures.select("id", F.explode(F.array(*entries)).alias("bk")).select(
-        "id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
 
 
 def lsh_candidate_pairs(
     signatures: DataFrame, bands: int = 4, rows_per_band: int = 2, max_bucket: int = 1000
 ) -> DataFrame:
-    """Band the signature, bucket on band key, emit distinct id pairs.
-
-    One-shuffle plan: the signature row is melted to ``bands`` (band, key)
-    rows via a single explode (NOT a union — union branches would each
-    recompute the signature aggregation), shuffled once on (band, key),
-    where a window count drops degenerate buckets and a collect_list +
-    double-explode expands pairs locally. No self-join: the old
-    join-on-band-key shape shuffled the melted set three times (size agg,
-    semi-join, self-join) and recomputed the signature subtree per branch.
-
-    ``max_bucket`` caps degenerate buckets (a band key shared by huge doc
-    counts would explode quadratically — the classic LSH skew failure at
-    scale; capped buckets are dropped, trading recall for boundedness).
-    The window count runs BEFORE collect_list so a mega-bucket spills in
-    WindowExec instead of ballooning an aggregation buffer.
+    """Band the signature, bucket on band key, emit distinct id pairs:
+    one (band, key) shuffle through :func:`band_melt` and
+    :func:`capped_bucket_pairs`, whose ``max_bucket`` cap drops degenerate
+    buckets (the classic LSH skew failure), trading recall for boundedness.
     """
-    melted = _band_melt(signatures, bands, rows_per_band)
-    w = Window.partitionBy("band", "key")
-    bounded = (
-        melted.withColumn("bucket_n", F.count("*").over(w))
-        .filter(F.col("bucket_n") <= max_bucket)
-        .drop("bucket_n")
-    )
-    # same (band, key) partitioning as the window -> no second shuffle
-    buckets = bounded.groupBy("band", "key").agg(F.collect_list("id").alias("ids"))
-    return (
-        buckets.filter(F.size("ids") >= 2)
-        .select(F.explode("ids").alias("id_a"), "ids")
-        .select("id_a", F.explode("ids").alias("id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
-        .distinct()
-    )
+    melted = band_melt(signatures, F.col("id"), _minhash_keys(bands, rows_per_band))
+    return capped_bucket_pairs(melted, ["band", "key"], max_bucket, dedupe=True)
 
 
 def lsh_candidate_pairs_multi(
@@ -240,50 +212,15 @@ def lsh_candidate_pairs_multi(
     max_bucket: int = 1000,
 ) -> DataFrame:
     """Candidate pairs for SEVERAL bandings of one signature in a single
-    shuffle: (cfg, id_a, id_b), cfg = "{bands}x{rows}".
-
-    The per-config :func:`lsh_candidate_pairs` loop evaluates the
-    signature subtree once per config AND shuffles each config's melted
-    rows separately (4 configs = 4 window shuffles + 4 pair expansions);
-    this melts every config's band keys in ONE explode and runs ONE
-    (cfg, band, key) shuffle, after which the window cap + collect_list
-    pair expansion are identical per bucket. Output rows are distinct
-    per (cfg, pair) — exactly the union of the per-config outputs.
+    shuffle: (cfg, id_a, id_b), cfg = "{bands}x{rows}" — exactly the
+    union of the per-config :func:`lsh_candidate_pairs` outputs, which a
+    loop would pay one signature evaluation and one shuffle per config for.
     """
-    entries = []
-    for bands, rows_per_band in configs:
-        cfg = f"{bands}x{rows_per_band}"
-        for b in range(bands):
-            entries.append(
-                F.struct(
-                    F.lit(cfg).alias("cfg"),
-                    F.lit(b).alias("band"),
-                    F.concat_ws(
-                        "_",
-                        *[
-                            f"mh{b * rows_per_band + r}"
-                            for r in range(rows_per_band)
-                        ],
-                    ).alias("key"),
-                )
-            )
-    melted = signatures.select(
-        "id", F.explode(F.array(*entries)).alias("bk")
-    ).select("id", "bk.cfg", "bk.band", "bk.key")
-    w = Window.partitionBy("cfg", "band", "key")
-    bounded = (
-        melted.withColumn("bucket_n", F.count("*").over(w))
-        .filter(F.col("bucket_n") <= max_bucket)
-        .drop("bucket_n")
-    )
-    buckets = bounded.groupBy("cfg", "band", "key").agg(
-        F.collect_list("id").alias("ids")
-    )
+    keys = {f"{b}x{r}": _minhash_keys(b, r) for b, r in configs}
+    melted = band_melt(signatures, F.col("id"), keys)
     return (
-        buckets.filter(F.size("ids") >= 2)
-        .select("cfg", F.explode("ids").alias("id_a"), "ids")
-        .select("cfg", "id_a", F.explode("ids").alias("id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
+        capped_bucket_pairs(melted, ["cfg", "band", "key"], max_bucket, keep_bucket=True)
+        .select("cfg", "id_a", "id_b")
         .distinct()
     )
 
@@ -441,56 +378,19 @@ def simhash_banded_pairs(
 ) -> DataFrame:
     """SimHash scale path: pigeonhole banding instead of all-pairs.
 
-    If two signatures differ in <= max_hamming bits and the signature is
-    split into ``bands`` > max_hamming contiguous slices, at least one
-    slice is bit-identical — so bucketing each slice and pairing within
-    buckets finds EVERY pair within the radius (exact, not probabilistic,
-    given bands >= max_hamming+1). Same single-shuffle shape as
-    :func:`lsh_candidate_pairs`: explode band slices, window-cap buckets,
-    collect_list + double-explode, then one hash-join back to signatures
-    to verify true hamming distance.
+    Split into ``bands`` > max_hamming contiguous slices, two signatures
+    within max_hamming bits agree on at least one slice, so
+    :func:`similarity.banded_hamming_pairs` finds EVERY pair within the
+    radius (exact, not probabilistic) unless its only shared buckets
+    hold more than ``max_bucket`` signatures and are dropped.
     """
     if bands <= max_hamming:
         raise ValueError(
             f"bands={bands} must exceed max_hamming={max_hamming} for the "
             "pigeonhole guarantee"
         )
-    band_bits = bits // bands
-    entries = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftright(F.col("simhash"), b * band_bits)
-            .bitwiseAND(F.lit((1 << band_bits) - 1))
-            .alias("key"),
-        )
-        for b in range(bands)
-    ]
-    # carry the signature into the bucket rows: pairs come out with both
-    # sigs attached, so the hamming verify is a narrow map — no join back,
-    # and the signature subtree is computed exactly once.
-    melted = sig.select("id", "simhash", F.explode(F.array(*entries)).alias("bk")).select(
-        "id", "simhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-    w = Window.partitionBy("band", "key")
-    bounded = (
-        melted.withColumn("bucket_n", F.count("*").over(w))
-        .filter(F.col("bucket_n") <= max_bucket)
-        .drop("bucket_n")
-    )
-    buckets = bounded.groupBy("band", "key").agg(
-        F.collect_list(F.struct("id", "simhash")).alias("members")
-    )
-    return (
-        buckets.filter(F.size("members") >= 2)
-        .select(F.explode("members").alias("a"), "members")
-        .select("a", F.explode("members").alias("b"))
-        .filter(F.col("a.id") < F.col("b.id"))
-        .withColumn(
-            "hamming", F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-        )
-        .filter(F.col("hamming") <= max_hamming)  # narrow, BEFORE the distinct shuffle
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), "hamming")
-        .distinct()
+    return banded_hamming_pairs(
+        sig, "id", "simhash", bands, bits // bands, max_hamming, max_bucket
     )
 
 
@@ -541,51 +441,29 @@ def incremental_minhash_dedup(
     is of :func:`exact_duplicates`.
 
     Scale shape: the existing corpus reduces to its band-key INDEX
-    (``bands`` narrow rows per doc — precompute it once, store it
-    partitioned by (band, key), and each arriving batch equi-joins it
-    instead of re-scanning corpus text). Candidate generation is
-    batch-signatures x index on (band, key) with the same ``max_bucket``
-    skew cap as the self-join path; existing-side TEXT is touched only
-    for Jaccard verification of candidates (the join is keyed by
-    candidate ids, so the quadratic step is bounded by LSH recall, and
-    batch-vs-corpus work scales with the batch, not the corpus).
+    (``bands`` narrow rows per doc, buckets above ``max_bucket`` dropped
+    by :func:`cap_buckets`) — precompute it once, store it partitioned by
+    (band, key), and each batch equi-joins it instead of re-scanning
+    corpus text. Existing-side TEXT is touched only for the exact-Jaccard
+    verify of candidates, keyed by candidate ids, so batch-vs-corpus work
+    scales with the batch, not the corpus.
     """
-    # Round-12 negative result (do not re-try blind): the executed plan
-    # tokenizes documents 6x here (2 signature streams + sizes/verify
-    # references of each side's distinct shingle set). Persisting the
-    # two shingle tables — with signatures derived from the distinct set
-    # (bit-identical: multiset min == set min, the oracle's own sig CTE
-    # shape) — measured standalone 1.70s -> 2.99s, and the softer form
-    # (persist sh for sizes/verify only, keep stream signatures) 2.39s;
-    # tx_curation_delta moved 5.76 -> 7.34 / 6.44 the same way. Same
-    # mechanism as the prefix_jaccard persist A/B (r11 §8): the
-    # redundant subtrees overlap across cores inside one job, while a
-    # persist serializes the DAG behind a materialization barrier and
-    # pays the cache write. The 6-pass shape IS the fast shape at suite
-    # scale; at deployment the corpus side is a STORED band-key index
-    # (see docstring), which removes the corpus-side passes without any
-    # in-query cache.
-    sig_b = minhash_signatures(
-        word_shingle_stream(batch, shingle_words, text_col, id_col), num_hashes
-    )
-    sig_e = minhash_signatures(
-        word_shingle_stream(existing, shingle_words, text_col, id_col), num_hashes
-    )
-    index = _band_melt(sig_e, bands, rows_per_band)
-    w = Window.partitionBy("band", "key")
-    index = (
-        index.withColumn("bucket_n", F.count("*").over(w))
-        .filter(F.col("bucket_n") <= max_bucket)
-        .drop("bucket_n")
-        .select(F.col("id").alias("old_id"), "band", "key")
-    )
-    cand = (
-        _band_melt(sig_b, bands, rows_per_band)
-        .select(F.col("id").alias("new_id"), "band", "key")
-        .join(index, ["band", "key"])
-        .select("new_id", "old_id")
-        .distinct()
-    )
+    # Measured negative result: the plan tokenizes documents 6x (2
+    # signature streams + each side's shingle set for sizes/verify), yet
+    # persisting the two shingle tables ran 1.70s -> 2.99s standalone
+    # (persisting only sh: 2.39s; tx_curation_delta 5.76 -> 7.34/6.44):
+    # the redundant subtrees overlap across cores inside one job, while a
+    # persist serializes the DAG behind a materialization barrier.
+    keys = _minhash_keys(bands, rows_per_band)
+
+    def band_rows(docs: DataFrame, id_name: str) -> DataFrame:
+        stream = word_shingle_stream(docs, shingle_words, text_col, id_col)
+        sig = minhash_signatures(stream, num_hashes)
+        return band_melt(sig, F.col("id"), keys).withColumnRenamed("vec_id", id_name)
+
+    index = cap_buckets(band_rows(existing, "old_id"), ["band", "key"], max_bucket)
+    cand = band_rows(batch, "new_id").join(index, ["band", "key"])
+    cand = cand.select("new_id", "old_id").distinct()
     sh_b = word_shingles(batch, shingle_words, text_col, id_col)
     sh_e = word_shingles(existing, shingle_words, text_col, id_col)
     sizes_b = sh_b.groupBy("id").agg(F.count("*").alias("n_new"))
@@ -596,13 +474,11 @@ def incremental_minhash_dedup(
         .groupBy("new_id", "old_id")
         .agg(F.count("*").alias("common"))
     )
+    jaccard = F.col("common") / (F.col("n_new") + F.col("n_old") - F.col("common"))
     dropped = (
         common.join(sizes_b.select(F.col("id").alias("new_id"), "n_new"), "new_id")
         .join(sizes_e.select(F.col("id").alias("old_id"), "n_old"), "old_id")
-        .filter(
-            F.col("common") / (F.col("n_new") + F.col("n_old") - F.col("common"))
-            >= F.lit(threshold)
-        )
+        .filter(jaccard >= F.lit(threshold))
         .select(F.col("new_id").alias(id_col))
         .distinct()
     )
@@ -1121,18 +997,11 @@ def winnowing_pairs(
 ) -> DataFrame:
     """(id_a, id_b, n_shared): document pairs sharing at least
     ``min_shared`` distinct winnowing fingerprint hashes — the MOSS
-    match stage: the fingerprint index is joined to itself on the hash
-    with the standard stop-fingerprint cap (hashes in more than
-    ``max_docs_per_fp`` docs are template/boilerplate mass and dropped,
-    the same bounded-bucket rule as every LSH join here). Rides the
-    shared single-shuffle capped expansion (similarity.capped_bucket_pairs
-    — window cap then collect_list + double-explode on ONE partitioning):
-    the old index self-join shuffled twice and re-evaluated the whole
-    fingerprint pipeline once per join branch (~4x at sf0.1). The window
-    count per hash over the distinct (id, h) rows IS the per-fingerprint
-    doc frequency, so the cap semantics are unchanged."""
-    from odbc2parquet_spark.operators.similarity import capped_bucket_pairs
-
+    match stage. Pairs come from similarity.capped_bucket_pairs with the
+    hash as the bucket and the standard stop-fingerprint cap: a hash in
+    more than ``max_docs_per_fp`` docs (template/boilerplate mass) is
+    dropped, since the window count over the distinct (id, h) rows is
+    the per-fingerprint doc frequency."""
     fp = fingerprints.select(F.col("id").alias("vec_id"), "h").distinct()
     return (
         capped_bucket_pairs(fp, ["h"], max_docs_per_fp)

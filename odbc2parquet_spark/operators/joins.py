@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from odbc2parquet_spark.operators.similarity import cap_buckets
+
 
 def salted_join(
     big: DataFrame,
@@ -123,7 +125,6 @@ def deletion_blocked_fuzzy_match(
 
     Returns (probe_id, matched_id, distance).
     """
-    from pyspark.sql import Window as W
 
     def keyed(df: DataFrame, id_col: str, out_id: str, out_text: str) -> DataFrame:
         prefix = (
@@ -151,12 +152,7 @@ def deletion_blocked_fuzzy_match(
     pk = keyed(probes, probe_id, "probe_id", "ptext")
     mk = keyed(master, master_id, "matched_id", "mtext")
     if max_block is not None:
-        wb = W.partitionBy("bkey")
-        mk = (
-            mk.withColumn("block_n", F.count("*").over(wb))
-            .filter(F.col("block_n") <= max_block)
-            .drop("block_n")
-        )
+        mk = cap_buckets(mk, ["bkey"], max_block)
     pairs = pk.join(mk, "bkey").select(
         "probe_id", "ptext", "matched_id", "mtext"
     ).distinct()

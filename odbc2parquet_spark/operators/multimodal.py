@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from odbc2parquet_spark.operators.similarity import banded_hamming_pairs
+
 #: output schema of the decoder — what a real image decode would produce.
 FEATURE_SCHEMA = (
     "doc_id long, n_bytes long, fake_width int, fake_height int, "
@@ -966,56 +968,17 @@ def dhash_near_pairs(
     max_hamming: int = 6,
     max_bucket: int = 1000,
 ) -> DataFrame:
-    """Near-duplicate image pairs from dHash values via banded pigeonhole:
-    any two 56-bit hashes within ``max_hamming`` (< bands * ... pigeonhole
-    guarantee holds when max_hamming < bands) share at least one exact
-    14-bit band, so candidate generation is ``bands`` equi-join buckets —
-    never all-pairs. Buckets above ``max_bucket`` are dropped (degenerate
-    content; same cap policy as the text LSH paths), then the exact
-    Hamming distance (bit_count of xor) verifies each candidate.
+    """Near-duplicate image pairs (id_a, id_b, hamming) from dHash values:
+    :func:`similarity.banded_hamming_pairs` pairs hashes that agree on one
+    of ``bands`` ``band_bits``-bit slices (buckets above ``max_bucket``
+    dropped, as in the text LSH paths; NULL hashes never paired) and keeps
+    those within ``max_hamming`` bits. Finding every such pair is
+    guaranteed only when max_hamming < bands (pigeonhole) and the slices
+    cover the hash; at the defaults (4 bands, max_hamming 6) a pair whose
+    differing bits touch all four bands is missed.
     """
-    mask = (1 << band_bits) - 1
-    melted = hashes.select(
-        F.col("doc_id"),
-        F.col("dhash"),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftright(F.col("dhash"), b * band_bits)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("key"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("bk"),
-    ).select("doc_id", "dhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    w = Window.partitionBy("band", "key")
-    capped = melted.withColumn("bucket_n", F.count("*").over(w)).filter(
-        F.col("bucket_n") <= max_bucket
-    )
-    a = capped.alias("a")
-    b = capped.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.col("a.dhash").alias("ha"),
-            F.col("b.dhash").alias("hb"),
-        )
-        .distinct()
-    )
-    dist = F.bit_count(F.expr("ha ^ hb"))
-    return (
-        cand.withColumn("hamming", dist.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    return banded_hamming_pairs(
+        hashes, "doc_id", "dhash", bands, band_bits, max_hamming, max_bucket
     )
 
 

@@ -9,9 +9,9 @@ Scale notes:
   Q is small (a probe set) or N fits a broadcast; it broadcasts the query
   side so the corpus never shuffles.
 - Random-hyperplane LSH assigns each vector a b-bit signature in one
-  narrow projection pass (no shuffle at all); bucket join replaces the
-  cross join. Hyperplanes are md5-derived constants — deterministic
-  across runs and engines.
+  narrow projection pass (no shuffle at all); pairing within buckets
+  (capped_bucket_pairs) replaces the cross join. Hyperplanes are
+  md5-derived constants — deterministic across runs and engines.
 - Exact-cosine outputs are rounded to 4 decimals before ranking/filtering
   so independent engines (different summation order, same values) agree.
 """
@@ -176,8 +176,8 @@ def lsh_signatures(
 ) -> DataFrame:
     """b-bit random-hyperplane signature per vector: (vec_id, sig).
 
-    One narrow projection pass, no shuffle; signatures feed a bucket
-    equi-join (same shape as MinHash banding) in place of a cross join.
+    One narrow projection pass, no shuffle; signatures feed the bucket
+    pairing of :func:`capped_bucket_pairs` in place of a cross join.
     """
     planes = hyperplanes(n_planes, dim)
     # One packed plane-matrix literal + a single indexed transform: the
@@ -200,6 +200,18 @@ def lsh_signatures(
     return vectors.select(F.col(id_col).alias("vec_id"), sig.alias("sig"))
 
 
+def cap_buckets(bucketed: DataFrame, bucket_cols: list[str], max_bucket: int) -> DataFrame:
+    """Drop every bucket (one ``bucket_cols`` value) of more than
+    ``max_bucket`` rows, by a window count: a hot bucket spills in
+    WindowExec, and the rows keep the bucket partitioning."""
+    w = W.partitionBy(*bucket_cols)
+    return (
+        bucketed.withColumn("_bn_", F.count("*").over(w))
+        .filter(F.col("_bn_") <= max_bucket)
+        .drop("_bn_")
+    )
+
+
 def capped_bucket_pairs(
     bucketed: DataFrame,
     bucket_cols: list[str],
@@ -208,41 +220,86 @@ def capped_bucket_pairs(
     keep_bucket: bool = False,
     dedupe: bool = False,
 ) -> DataFrame:
-    """THE single-shuffle capped bucket-to-pairs expansion, shared by
-    every LSH candidate generator (prefix, multi-probe, banded — and the
-    plan-shape guarantee pinned by tests/test_plans.py covers this one
-    definition): shuffle once on ``bucket_cols``, window-count drops
-    buckets above ``max_bucket`` (a hot bucket would otherwise go
-    quadratic inside one task), then collect_list + double-explode
-    expands pairs locally on the SAME partitioning — the window runs
-    before collect_list so a mega-bucket spills in WindowExec, never in
-    an aggregation buffer. ``directed`` emits both orientations;
+    """THE single-shuffle capped bucket-to-pairs expansion behind every
+    LSH and banding candidate generator (tests/test_plans.py pins its plan
+    shape): one shuffle on ``bucket_cols``, :func:`cap_buckets` drops
+    buckets above ``max_bucket`` (a hot bucket would go quadratic inside
+    one task), then collect_list + double-explode expands pairs locally
+    on the SAME partitioning. ``directed`` emits both orientations;
     ``dedupe`` collapses pairs that met in several buckets.
 
-    ``bucketed`` must be (vec_id, *bucket_cols).
+    ``bucketed`` must be (vec_id, *bucket_cols). ``vec_id`` may be a
+    struct led by the id: pairs are ordered by it and carry the other
+    fields, so a verify step needs no join back.
     """
-    w = W.partitionBy(*bucket_cols)
-    bounded = (
-        bucketed.withColumn("_bn_", F.count("*").over(w))
-        .filter(F.col("_bn_") <= max_bucket)
-        .drop("_bn_")
-    )
-    buckets = bounded.groupBy(*bucket_cols).agg(
-        F.collect_list("vec_id").alias("ids")
-    )
-    pred = (
-        (F.col("id_a") != F.col("id_b"))
-        if directed
-        else (F.col("id_a") < F.col("id_b"))
-    )
+    capped = cap_buckets(bucketed, bucket_cols, max_bucket)
+    buckets = capped.groupBy(*bucket_cols).agg(F.collect_list("vec_id").alias("ids"))
+    a, b = F.col("id_a"), F.col("id_b")
     out = (
         buckets.filter(F.size("ids") >= 2)
         .select(*bucket_cols, F.explode("ids").alias("id_a"), "ids")
         .select(*bucket_cols, "id_a", F.explode("ids").alias("id_b"))
-        .filter(pred)
+        .filter(a != b if directed else a < b)
         .select("id_a", "id_b", *(bucket_cols if keep_bucket else []))
     )
     return out.distinct() if dedupe else out
+
+
+def bit_slices(col: F.Column, bands: int, band_bits: int) -> list[F.Column]:
+    """The ``bands`` contiguous ``band_bits``-bit slices of integer
+    ``col``, lowest bits first: the band keys of a bit signature."""
+    mask = F.lit((1 << band_bits) - 1)
+    return [F.shiftright(col, b * band_bits).bitwiseAND(mask) for b in range(bands)]
+
+
+def band_melt(
+    frame: DataFrame, vec_id: F.Column, keys: list[F.Column] | dict[str, list[F.Column]]
+) -> DataFrame:
+    """THE banding step: one (vec_id, band, key) row per expression in
+    ``keys`` (band = its index) from ONE explode, which evaluates
+    ``frame`` once where a per-band union would evaluate it per band. A
+    dict of banding name -> keys melts several bandings at once, the
+    name in a leading ``cfg`` column."""
+    multi = isinstance(keys, dict)
+    entries = [
+        F.struct(
+            *([F.lit(cfg).alias("cfg")] if multi else []), F.lit(b).alias("band"), k.alias("key")
+        )
+        for cfg, band_keys in (keys.items() if multi else [(None, keys)])
+        for b, k in enumerate(band_keys)
+    ]
+    cols = ["cfg", "band", "key"] if multi else ["band", "key"]
+    melted = frame.select(vec_id.alias("vec_id"), F.explode(F.array(*entries)).alias("bk"))
+    return melted.select("vec_id", *[F.col(f"bk.{c}").alias(c) for c in cols])
+
+
+def banded_hamming_pairs(
+    frame: DataFrame,
+    id_col: str,
+    sig_col: str,
+    bands: int,
+    band_bits: int,
+    max_hamming: int,
+    max_bucket: int,
+) -> DataFrame:
+    """(id_a, id_b, hamming): pairs whose integer signatures agree on at
+    least one of ``bands`` :func:`bit_slices` and differ in at most
+    ``max_hamming`` bits. Pairs carry both signatures out of
+    :func:`capped_bucket_pairs`, so the hamming filter is a narrow map
+    ahead of the distinct. A NULL signature pairs with nothing."""
+    melted = band_melt(
+        frame.filter(F.col(sig_col).isNotNull()),
+        F.struct(id_col, sig_col),
+        bit_slices(F.col(sig_col), bands, band_bits),
+    )
+    a, b = F.col("id_a"), F.col("id_b")
+    return (
+        capped_bucket_pairs(melted, ["band", "key"], max_bucket)
+        .withColumn("hamming", F.bit_count(a[sig_col].bitwiseXOR(b[sig_col])))
+        .filter(F.col("hamming") <= max_hamming)
+        .select(a[id_col].alias("id_a"), b[id_col].alias("id_b"), "hamming")
+        .distinct()
+    )
 
 
 def derived_prefix_bits(
@@ -291,45 +348,25 @@ def lsh_bucket_pairs(
     n_vectors: int | None = None,
     max_prefix_bits: int = 24,
 ) -> DataFrame:
-    """Candidate pairs sharing a signature prefix bucket.
+    """Candidate pairs sharing a signature prefix bucket, from
+    :func:`capped_bucket_pairs` (one hot bucket — e.g. the all-zeros
+    signature region of a clustered corpus — is dropped by the
+    ``max_bucket`` cap).
 
     ``directed=True`` emits BOTH orientations of every pair in the same
-    single bucket pass (for per-node neighbor lists, e.g.
-    :func:`knn_graph`) instead of the canonical ``id_a < id_b`` half —
+    bucket pass (for per-node neighbor lists, e.g. :func:`knn_graph`) —
     cheaper than unioning a flipped copy, which would re-run the whole
     bucket expansion.
-
-    Single-shuffle capped shape (same as the MinHash twin,
-    dedup.lsh_candidate_pairs): shuffle once on ``bucket``, window-count
-    drops buckets above ``max_bucket`` (one hot bucket — e.g. the
-    all-zeros signature region of a clustered corpus — would otherwise go
-    quadratic inside one task at scale), then collect_list +
-    double-explode expands pairs locally on the same partitioning. The
-    window runs BEFORE collect_list so a mega-bucket spills in WindowExec
-    instead of ballooning an aggregation buffer. No self-join: the old
-    join-on-bucket shape shuffled twice and recomputed the signature
-    projection per branch.
     """
     if target_occupancy is not None:
-        # occupancy-scaled width: derive the bucket count from the corpus
-        # size (explicit prefix_bits callers keep their pinned operating
-        # point untouched). n_vectors, when the caller already knows it,
-        # avoids the count job; otherwise one cheap count over the
-        # signature frame (parquet-metadata-cheap when signatures are a
-        # narrow projection of a parquet scan).
+        # occupancy-scaled width: the bucket count follows the corpus size
+        # (a known n_vectors avoids the count job); max_prefix_bits caps it
+        # at the signature's plane count, beyond which buckets would alias
         n = n_vectors if n_vectors is not None else signatures.count()
-        # max_prefix_bits caps at the signature's plane count — a derived
-        # width beyond the available bits would alias buckets silently
-        prefix_bits = derived_prefix_bits(
-            n, target_occupancy, max_bits=max_prefix_bits
-        )
+        prefix_bits = derived_prefix_bits(n, target_occupancy, max_bits=max_prefix_bits)
     mask = (1 << prefix_bits) - 1
-    bucketed = signatures.select(
-        "vec_id", F.col("sig").bitwiseAND(F.lit(mask)).alias("bucket")
-    )
-    return capped_bucket_pairs(
-        bucketed, ["bucket"], max_bucket, directed=directed, keep_bucket=True
-    )
+    bucketed = signatures.select("vec_id", F.col("sig").bitwiseAND(F.lit(mask)).alias("bucket"))
+    return capped_bucket_pairs(bucketed, ["bucket"], max_bucket, directed=directed, keep_bucket=True)
 
 
 # ------------------------------------------------------------------ IVF
@@ -1329,20 +1366,13 @@ def lsh_multiprobe_pairs(
     bits flipped) — near-misses that landed one bit apart still collide,
     recovering recall that single-bucket LSH loses without adding tables.
 
-    Still the capped single-expansion shape: explode to (1 + probes)
-    bucket rows per vector, one shuffle on bucket, window cap, local pair
-    expansion, then a distinct since a pair can now meet in several
-    buckets. Candidate volume scales by (1 + probes), not by table count
-    — the standard trade for higher recall at fixed index size.
+    (1 + probes) bucket rows per vector go through
+    :func:`capped_bucket_pairs`, deduped since a pair can meet in several
+    buckets: candidate volume scales by (1 + probes), not by table count.
     """
-    mask = (1 << prefix_bits) - 1
-    base = F.col("sig").bitwiseAND(F.lit(mask))
-    bucket_list = F.array(
-        base, *[base.bitwiseXOR(F.lit(1 << j)) for j in range(probes)]
-    )
-    bucketed = signatures.select(
-        "vec_id", F.explode(bucket_list).alias("bucket")
-    )
+    base = F.col("sig").bitwiseAND(F.lit((1 << prefix_bits) - 1))
+    bucket_list = F.array(base, *[base.bitwiseXOR(F.lit(1 << j)) for j in range(probes)])
+    bucketed = signatures.select("vec_id", F.explode(bucket_list).alias("bucket"))
     return capped_bucket_pairs(bucketed, ["bucket"], max_bucket, dedupe=True)
 
 
@@ -1359,19 +1389,9 @@ def lsh_banded_pairs(
     For moderate-similarity targets a single wide prefix is the wrong
     shape — collision probability decays exponentially in prefix bits
     (measured: 3/59 true cos>=0.4 pairs found by one 8-bit prefix).
-    Banding trades candidate volume for recall with the same single
-    explode -> capped bucket expansion; (band_id, key) is the bucket key,
-    so all bands ride ONE shuffle.
+    (band, key) is the bucket key, so all bands ride ONE shuffle.
     """
-    band_exprs = []
-    for j in range(bands):
-        key = F.shiftright(F.col("sig"), j * band_bits).bitwiseAND(
-            F.lit((1 << band_bits) - 1)
-        )
-        band_exprs.append(F.struct(F.lit(j).alias("band"), key.alias("key")))
-    melted = signatures.select(
-        "vec_id", F.explode(F.array(*band_exprs)).alias("bk")
-    ).select("vec_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    melted = band_melt(signatures, F.col("vec_id"), bit_slices(F.col("sig"), bands, band_bits))
     return capped_bucket_pairs(melted, ["band", "key"], max_bucket, dedupe=True)
 
 
@@ -1441,7 +1461,6 @@ def semantic_dedup_cells(
         .withColumn("kept", ~F.col("pruned"))
         .drop("pruned")
     )
-
 
 
 def mmr_rerank(

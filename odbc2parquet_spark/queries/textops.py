@@ -1666,11 +1666,11 @@ def _hash_band_pairs_sql(src: str, col: str, width: int, n_bands: int) -> str:
     oracle="WITH " + _DHASH_CTE + "," + _hash_band_pairs_sql("dh", "dhash", 14, 4),
 )
 def mm_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image near-duplicate pairs: banded pigeonhole over the 56-bit
-    dHash (4 x 14-bit bands — any pair within Hamming 6 < 4 bands must
-    collide on one band), capped buckets, exact bit_count(xor) verify.
-    The image twin of dd_simhash_banded; candidate generation is 4
-    equi-join buckets, never all-pairs."""
+    """Image near-duplicate pairs: pairs sharing one of the 56-bit dHash's
+    4 x 14-bit bands (complete only below Hamming 4 by pigeonhole),
+    capped buckets, exact bit_count(xor) <= 6 verify. The image twin of
+    dd_simhash_banded; candidates come from one bucket shuffle, never
+    all-pairs."""
     docs = load_table(spark, sf_dir, "documents")
     hashes = M.dhash_bmp(M.encode_bmp(docs))
     return M.dhash_near_pairs(hashes, bands=4, band_bits=14, max_hamming=6)

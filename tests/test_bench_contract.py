@@ -345,3 +345,28 @@ def test_cachereg_track_release_race(spark):
     released.append(cachereg.release(spark))
     assert sum(released) == sum(len(fs) for fs in frames)
     assert all(f.unpersisted == 1 for fs in frames for f in fs)
+
+
+@pytest.mark.parametrize("phase", ["construct", "execute"])
+def test_run_query_failure_names_query_and_phase(spark, sf_dir, monkeypatch, phase):
+    """A query that fails while being built and one that fails in its
+    write both surface as an error naming the query and the phase, and
+    the job description is cleared either way."""
+    from pyspark.sql import functions as F
+
+    import bench
+    from odbc2parquet_spark.queries import QUERIES
+
+    def fails_at_construct(spark, sf_dir):
+        raise ValueError("no such table")
+
+    def fails_at_execute(spark, sf_dir):
+        return spark.range(3).select(F.raise_error(F.lit("bad row")).alias("x"))
+
+    name = f"broken_at_{phase}"
+    build = fails_at_construct if phase == "construct" else fails_at_execute
+    monkeypatch.setitem(QUERIES, name, build)
+    with pytest.raises(RuntimeError, match=f"query {name} failed in {phase}") as err:
+        bench.run_query(spark, name, sf_dir)
+    assert ("no such table" if phase == "construct" else "bad row") in str(err.value)
+    assert spark.sparkContext.getLocalProperty("spark.job.description") is None

@@ -1155,6 +1155,111 @@ def test_minhash_band_cap_drops_hot_band_bucket_only(spark):
     assert pairs == {(10, 11)}
 
 
+def _banded_reference(sigs, bands, band_bits, max_hamming, max_bucket):
+    """Brute-force (id_a, id_b, hamming) for banded pigeonhole pairing:
+    pairs inside a (band, slice) bucket of at most ``max_bucket`` ids,
+    within ``max_hamming`` bits; a None signature never pairs."""
+    from collections import defaultdict
+
+    buckets = defaultdict(list)
+    for i, v in sigs.items():
+        if v is not None:
+            for b in range(bands):
+                buckets[(b, (v >> (b * band_bits)) & ((1 << band_bits) - 1))].append(i)
+    out = set()
+    for ids in buckets.values():
+        if len(ids) <= max_bucket:
+            for a in ids:
+                for c in ids:
+                    h = bin(sigs[a] ^ sigs[c]).count("1")
+                    if a < c and h <= max_hamming:
+                        out.add((a, c, h))
+    return out
+
+
+def _incremental_reference(existing, batch, max_bucket, threshold=0.5):
+    """Brute-force incremental_minhash_dedup at its defaults (3-word
+    shingles, 8 md5 min-hashes, 4 bands x 2 rows): the sorted batch ids
+    with no verified near-dup among existing docs that share a band
+    bucket of at most ``max_bucket`` existing docs."""
+    import hashlib
+    from collections import Counter
+
+    def shingles(text):
+        ws = text.split(" ")
+        return {" ".join(ws[i : i + 3]) for i in range(len(ws) - 2)}
+
+    def band_keys(grams):
+        hs = [hashlib.md5(g.encode()).hexdigest() for g in grams]
+        mh = [
+            min((int(h[:15], 16) + j * int(h[15:30], 16)) % (1 << 60) for h in hs)
+            for j in range(8)
+        ]
+        return {(b, f"{mh[2 * b]}_{mh[2 * b + 1]}") for b in range(4)} if grams else set()
+
+    old = {i: shingles(t) for i, t in existing}
+    sizes = Counter(k for g in old.values() for k in band_keys(g))
+    kept = []
+    for i, t in batch:
+        new = shingles(t)
+        keys = {k for k in band_keys(new) if sizes[k] <= max_bucket}
+        dup = any(
+            keys & band_keys(g) and len(new & g) / len(new | g) >= threshold
+            for g in old.values()
+        )
+        if not dup:
+            kept.append(i)
+    return sorted(kept)
+
+
+_T = "the quick brown fox jumps over the lazy dog near the river bank"
+_U = "a stitch in time saves nine said the tailor to his young apprentice today"
+
+
+@pytest.mark.parametrize("operator", ["simhash_banded", "dhash_near", "incremental_minhash"])
+def test_candidate_cap_matches_bruteforce(spark, operator):
+    """The bucket cap of the banded generators and of the incremental
+    MinHash index, against a brute-force reference. Each fixture has one
+    bucket above ``max_bucket`` whose pairs the cap must drop (checked:
+    an uncapped reference differs); the dHash one also has a NULL hash."""
+    if operator == "incremental_minhash":
+        existing = [(1, _T), (2, _T), (3, _T), (4, _U)]
+        batch = [(10, _T), (11, _U.replace("today", "tonight")), (12, "novel words only here")]
+        old, new = (spark.createDataFrame(r, "doc_id long, text string") for r in (existing, batch))
+        got = sorted(r.doc_id for r in D.incremental_minhash_dedup(old, new, max_bucket=2).collect())
+        want = _incremental_reference(existing, batch, max_bucket=2)
+        assert want != _incremental_reference(existing, batch, max_bucket=3)
+        assert 10 in want and 11 not in want
+    else:
+        bits = 8 if operator == "simhash_banded" else 14
+        # ids 1-4 share slice 0 (4 > max_bucket 3); 1 and 2 differ in 3
+        # bits that touch every other band, so only the hot bucket pairs them
+        far = sum(((1 << bits) - 1) << (b * bits) for b in (1, 2, 3))
+        sigs = {
+            1: 0,
+            2: sum(1 << (b * bits) for b in (1, 2, 3)),
+            3: 3 << (3 * bits),
+            4: far,
+            5: 0x12345678,
+            6: 0x12345679,
+            7: 0x12345678 ^ (1 << 31),
+        }
+        if operator == "simhash_banded":
+            sig = spark.createDataFrame(list(sigs.items()), "id long, simhash long")
+            out = D.simhash_banded_pairs(sig, max_hamming=3, bits=32, bands=4, max_bucket=3)
+            args = (4, 8, 3)
+        else:
+            sigs[8] = None
+            hashes = spark.createDataFrame(list(sigs.items()), "doc_id long, dhash long")
+            out = M.dhash_near_pairs(hashes, bands=4, band_bits=14, max_hamming=6, max_bucket=3)
+            args = (4, 14, 6)
+        got = {(r.id_a, r.id_b, r.hamming) for r in out.collect()}
+        want = _banded_reference(sigs, *args, max_bucket=3)
+        assert want != _banded_reference(sigs, *args, max_bucket=4)
+        assert (1, 2, 3) not in want and want
+    assert got == want
+
+
 def test_decode_audio_samples_exact_pcm(spark):
     from odbc2parquet_spark.operators.multimodal import (
         decode_audio_samples,

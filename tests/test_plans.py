@@ -267,17 +267,27 @@ def test_simhash_signatures_zero_shuffle(plans):
     assert n_shuffles == 0, f"expected a narrow plan, saw {n_shuffles} shuffles"
 
 
-def test_lsh_bucket_pairs_capped_single_shuffle(plans):
-    # the ANN candidate join must use the capped collect_list shape: ONE
-    # shuffle on bucket (window + groupBy share the partitioning), a
-    # window-count cap bounding hot buckets, and no self-join (a bucket
+@pytest.mark.parametrize(
+    "name, n_exchanges",
+    [
+        ("sim_lsh_bucket_pairs", 1),
+        # + the distinct after the hamming verify / multi-band dedupe
+        ("dd_simhash_banded", 2),
+        ("sim_banded_pairs", 2),
+        ("mm_dhash_pairs", 2),
+    ],
+)
+def test_lsh_bucket_pairs_capped_single_shuffle(plans, name, n_exchanges):
+    # every candidate generator must use the capped collect_list shape:
+    # ONE shuffle on the bucket (window + groupBy share the partitioning),
+    # a window-count cap bounding hot buckets, and no self-join (a bucket
     # equi-join would shuffle twice and go quadratic on a hot bucket)
-    plan = plans["sim_lsh_bucket_pairs"]
+    plan = plans[name]
     n_shuffles = sum(
         1 for l in plan.splitlines() if l.strip().startswith("(") and ") Exchange" in l
     )
-    assert n_shuffles == 1, f"expected exactly one shuffle, saw {n_shuffles}"
-    assert "Window" in plan, "bucket cap window missing"
+    assert n_shuffles == n_exchanges, f"{name}: expected {n_exchanges} shuffles, saw {n_shuffles}"
+    assert "Window" in plan, f"{name}: bucket cap window missing"
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
 
 
