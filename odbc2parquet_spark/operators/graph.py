@@ -1,29 +1,108 @@
-"""Connected components — near-duplicate pairs to duplicate CLUSTERS.
+"""Graph operators over edge lists: connected components (near-duplicate
+pairs to duplicate CLUSTERS), PageRank and personalized PageRank, HITS,
+label propagation, k-core peeling, tree ancestry by pointer doubling, and
+the one-shot triangle and clustering-coefficient counts.
 
-Pair generation (MinHash/SimHash/cosine) yields edges; deduplication needs
-components: every document labeled with its cluster so one canonical doc
-per cluster survives. This is iterative min-label propagation:
+The eight iterative operators are a seed frame plus a step function run by
+:func:`_fixpoint`, the one round loop. Each round is one or two keyed
+shuffles over the edge list; the round loop runs in the calling process
+because Spark SQL has no recursion, and it reads nothing back but the
+convergence counts. The loop feeds its own output back in, so an
+untruncated logical plan grows every round and Catalyst re-analysis
+dominates wall time long before data does; every round also costs a
+scheduler round trip when it is materialized. One rule trades the two:
 
-    label(v) <- min(label(v), min over neighbors u of label(u))
+* A convergence-tested loop checkpoints the seed and every round eagerly:
+  its predicate is a per-round action anyway. ``rounds`` is a cap, and a
+  loop that reaches it raises RuntimeError naming the operator; an
+  unconverged result is never returned.
+* A fixed-round loop stays lazy, truncated by an eager checkpoint every
+  ``_TRUNCATE_EVERY`` rounds and on the last round, so a short run is one
+  plan and one job. When the step reads the state twice, the plan doubles
+  per lazy round (2^4-bounded between truncations) and each lazy round is
+  persisted so its data is computed once.
+* A separate edge list the step reads every round is materialized once:
+  persisted lazily when the lazy state chain is linear, otherwise
+  checkpointed eagerly, because a persist caches blocks but re-embeds the
+  edge list's analyzed plan (an LSH or dedup pipeline) at every reference.
 
-repeated until fixpoint. Each round is one shuffle (groupBy dst) over the
-edge list; rounds needed ~ graph diameter (near-dup clusters are shallow —
-a handful of rounds in practice, bounded by ``max_iterations``). The
-driver-side loop is inherent to the algorithm (iterative fixpoint, not
-expressible as one SQL query without recursion) — per-round work is fully
-distributed; the driver only checks the convergence counter.
-
-At 100 TB scale the edge list is the near-dup pair output (orders of
-magnitude smaller than the corpus); persisting the current labels between
-rounds avoids recomputing the lineage each iteration.
+Every frame the loop materialized except the returned state is released
+on return, and everything is released when a step, the predicate or the
+cap raises. localCheckpoint is the single-session choice; on a cluster,
+checkpoint() to reliable storage instead.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from odbc2parquet_spark.operators.bucketing import release_local_checkpoint
+
+_TRUNCATE_EVERY = 4
+
+
+def _fixpoint(
+    seed: DataFrame | Callable[[DataFrame], DataFrame],
+    step: Callable[..., DataFrame],
+    rounds: int,
+    converged: Callable[[DataFrame, DataFrame], bool] | None = None,
+    *,
+    edges: DataFrame | None = None,
+    reads_twice: bool = False,
+    name: str = "",
+) -> DataFrame:
+    """Run ``step(state)`` from ``seed`` for ``rounds`` rounds under the
+    module's cadence rule and return the last state.
+
+    ``converged(new, old)`` makes ``rounds`` a cap: the loop stops at the
+    first round it holds and raises RuntimeError naming ``name`` if it
+    never does. ``edges`` is materialized once and passed to ``step``
+    after the state (and to ``seed``, when that is a function of it).
+    ``reads_twice`` declares a step that references the state twice.
+    """
+    tested = converged is not None
+    held: list[tuple[DataFrame, bool]] = []  # pinned edges, then the state's frames
+
+    def keep(df: DataFrame, eager: bool) -> DataFrame:
+        df = df.localCheckpoint(eager=True) if eager else df.persist()
+        held.append((df, eager))
+        return df
+
+    def release(frames: list[tuple[DataFrame, bool]]) -> None:
+        for df, eager in frames:
+            if eager:
+                release_local_checkpoint(df)
+            else:
+                df.unpersist()
+
+    try:
+        args = () if edges is None else (keep(edges, tested or reads_twice),)
+        pinned = len(held)
+        state = seed(*args) if callable(seed) else seed
+        if tested:
+            state = keep(state, True)
+        for i in range(rounds):
+            new = step(state, *args)
+            if tested or i + 1 == rounds or (i + 1) % _TRUNCATE_EVERY == 0:
+                new = keep(new, True)
+                done = tested and converged(new, state)
+                release(held[pinned:-1])  # superseded rounds
+                del held[pinned:-1]
+                state = new
+                if done:
+                    break
+            else:
+                state = keep(new, False) if reads_twice else new
+        else:
+            if tested:
+                raise RuntimeError(f"{name} did not converge in {rounds} rounds")
+        held[:] = [h for h in held if h[0] is not state]
+        return state
+    finally:
+        release(held)
 
 
 def connected_components(
@@ -35,10 +114,15 @@ def connected_components(
     max_iterations: int = 20,
 ) -> DataFrame:
     """(id, component): every node labeled with the min node id reachable
-    over the undirected edge set.
+    over the undirected edge set, by min-label propagation:
+
+        label(v) <- min(label(v), min over neighbors u of label(u))
+
+    repeated until no label changes, at most ``max_iterations`` rounds.
 
     ``nodes`` must contain every id (isolated nodes become their own
-    component). Converges in rounds ~ component diameter.
+    component). Converges in rounds ~ component diameter; near-dup
+    clusters are shallow, so that is a handful of rounds in practice.
 
     The propagation state carries ONLY edge-incident nodes: an isolated
     node can never receive a smaller label, so it joins the result once
@@ -47,13 +131,13 @@ def connected_components(
     corpus-sized — per-round joins, checkpoints, and change-detection all
     scale with the duplicate population instead of the full corpus.
     """
-    # materialize the ONE-directional pair list before symmetrizing: the
-    # union references the edge plan twice, and the upstream pair pipeline
-    # (MinHash signatures + banded join + Jaccard verification) would be
-    # evaluated once per branch inside the sym checkpoint job. Dangling
-    # endpoints (ids absent from the node set) are dropped HERE, so they
-    # can neither receive a label nor donate their id as a component
-    # minimum — the inert-endpoint contract, enforced structurally.
+    # Dangling endpoints (ids absent from the node set) are dropped HERE,
+    # so they can neither receive a label nor donate their id as a
+    # component minimum — the inert-endpoint contract, enforced
+    # structurally. The ONE-directional list is the pinned edge list:
+    # each round reads both orientations from its checkpoint, where a
+    # symmetrized plan would evaluate the upstream pair pipeline (MinHash
+    # signatures + banded join + Jaccard verification) once per branch.
     node_ids = nodes.select(F.col(node_col).alias("id")).distinct()
     directed = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
@@ -63,75 +147,64 @@ def connected_components(
         # union aligns by POSITION — re-project the canonical order so the
         # symmetrization below cannot silently align src with dst
         .select("src", "dst")
-        .localCheckpoint(eager=True)
     )
-    sym = directed.unionByName(
-        directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    # localCheckpoint between rounds: the fixpoint feeds its own output back
-    # in, and an un-truncated logical plan doubles per round — Catalyst
-    # re-analysis dominates wall time long before data does. On a cluster,
-    # checkpoint() to reliable storage instead. The EDGE list checkpoints
-    # eagerly too (not a bare persist): its upstream plan — MinHash
-    # signatures + banded candidate join + Jaccard verification in the
-    # dedup pipelines — is the dominant logical subtree, and a persist
-    # caches blocks but re-embeds that analyzed plan at every per-round
-    # join (measured on dd_keep_best_minhash at sf0.1).
-    sym = sym.localCheckpoint(eager=True)
+
+    def both_ways(directed: DataFrame) -> DataFrame:
+        return directed.union(
+            directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+
     # seed with the first propagation half-round folded in:
     # label(v) = min(v, min over neighbors) — near-dup clusters are mostly
     # diameter <= 2, so the seed is often already the fixpoint and the
     # loop exits after ONE confirming round instead of two
-    labels = (
-        sym.groupBy("src")
-        .agg(F.min("dst").alias("nmin"))
+    def seed(directed: DataFrame) -> DataFrame:
+        return (
+            both_ways(directed)
+            .groupBy("src")
+            .agg(F.min("dst").alias("nmin"))
+            .select(
+                F.col("src").alias("id"),
+                F.least(F.col("src"), F.col("nmin")).alias("component"),
+            )
+        )
+
+    def step(labels: DataFrame, directed: DataFrame) -> DataFrame:
+        sym = both_ways(directed)
+        neighbor_min = (
+            sym.join(labels, sym.src == labels.id)
+            .groupBy("dst")
+            .agg(F.min("component").alias("nmin"))
+        )
+        return labels.join(neighbor_min, labels.id == neighbor_min.dst, "left").select(
+            "id",
+            F.least(
+                F.col("component"), F.coalesce(F.col("nmin"), F.col("component"))
+            ).alias("component"),
+        )
+
+    def unchanged(new: DataFrame, old: DataFrame) -> bool:
+        return (
+            new.alias("n")
+            .join(old.alias("o"), "id")
+            .filter(F.col("n.component") != F.col("o.component"))
+            .limit(1)
+            .count()
+            == 0
+        )
+
+    labels = _fixpoint(
+        seed, step, max_iterations, unchanged, edges=directed, name="connected_components"
+    )
+    return (
+        nodes.select(F.col(node_col).alias("id"))
+        .join(labels.withColumnRenamed("id", "_eid_"),
+              F.col("id") == F.col("_eid_"), "left")
         .select(
-            F.col("src").alias("id"),
-            F.least(F.col("src"), F.col("nmin")).alias("component"),
+            "id",
+            F.coalesce(F.col("component"), F.col("id")).alias("component"),
         )
     )
-    try:
-        labels = labels.localCheckpoint(eager=True)
-        for _ in range(max_iterations):
-            neighbor_min = (
-                sym.join(labels, sym.src == labels.id)
-                .groupBy("dst")
-                .agg(F.min("component").alias("nmin"))
-            )
-            new_labels = (
-                labels.join(neighbor_min, labels.id == neighbor_min.dst, "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("component"), F.coalesce(F.col("nmin"), F.col("component"))
-                    ).alias("component"),
-                )
-            ).localCheckpoint(eager=True)
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "id")
-                .filter(F.col("n.component") != F.col("o.component"))
-                .limit(1)
-                .count()
-            )
-            # the superseded round's checkpoint blocks are dead weight —
-            # release them now instead of relying on a JVM GC cycle
-            release_local_checkpoint(labels)
-            labels = new_labels
-            if changed == 0:
-                break
-        return (
-            nodes.select(F.col(node_col).alias("id"))
-            .join(labels.withColumnRenamed("id", "_eid_"),
-                  F.col("id") == F.col("_eid_"), "left")
-            .select(
-                "id",
-                F.coalesce(F.col("component"), F.col("id")).alias("component"),
-            )
-        )
-    finally:
-        release_local_checkpoint(sym)
-        release_local_checkpoint(directed)
 
 
 def connected_components_star(
@@ -157,21 +230,12 @@ def connected_components_star(
 
     Each half-round is one groupBy shuffle over the current edge list; the
     edge list only shrinks (edges collapse onto component minima), so late
-    rounds are cheap. Convergence = the oriented edge set stops changing;
-    the converged graph is a star per component with the min id at the
-    center.
+    rounds are cheap. Convergence = the oriented edge set stops changing,
+    within ``max_iterations`` rounds; the converged graph is a star per
+    component with the min id at the center.
     """
-    # localCheckpoint (not bare persist) between rounds: the loop's output
-    # feeds its own input, and without truncation the logical plan doubles
-    # per round — Catalyst re-analysis, not the shuffles, becomes the
-    # bottleneck. On a cluster use checkpoint() on reliable storage.
-    e = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iterations):
+
+    def step(e: DataFrame) -> DataFrame:
         # Large-star over the symmetric neighborhood of u.
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = (
@@ -189,21 +253,24 @@ def connected_components_star(
         # After large-star every edge points big -> small, so the
         # small-star neighborhoods are exactly the groupBy(u) groups.
         smins = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
+        return (
             large.join(smins, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(smins.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        # Converged when the oriented edge set is stable. Both sides
-        # are distinct, so equal counts + empty difference <=> equal.
-        stable = small.count() == e.count() and small.exceptAll(e).limit(1).count() == 0
-        release_local_checkpoint(e)  # superseded round: free its blocks
-        e = small
-        if stable:
-            break
+
+    def stable(new: DataFrame, old: DataFrame) -> bool:
+        # Both sides are distinct, so equal counts + empty difference <=> equal.
+        return new.count() == old.count() and new.exceptAll(old).limit(1).count() == 0
+
+    seed = (
+        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+    )
+    e = _fixpoint(seed, step, max_iterations, stable, name="connected_components_star")
     labels = e.groupBy("u").agg(F.min("v").alias("component"))
     return (
         nodes.select(F.col(node_col).alias("id"))
@@ -275,6 +342,36 @@ def canonical_representatives(
     )
 
 
+def _rank_walk(
+    edges: DataFrame,
+    src_col: str,
+    dst_col: str,
+    seed: DataFrame,
+    update: Callable[[DataFrame], DataFrame],
+    iterations: int,
+) -> DataFrame:
+    """The rank push shared by :func:`pagerank_int` and
+    :func:`personalized_pagerank_int`: each round every node sends
+    ``rank div out_deg`` along its out-edges, ``update`` turns the
+    per-node sums (id, s) into the next (id, rank). The edge list (possibly
+    a whole LSH pipeline upstream) materializes once with its out-degrees
+    attached (per-src window); each round is then one join + one
+    groupBy(dst) shuffle over it."""
+    weighted = edges.select(
+        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    ).withColumn("out_deg", F.count("*").over(Window.partitionBy("src")))
+
+    def step(ranks: DataFrame, weighted: DataFrame) -> DataFrame:
+        return update(
+            weighted.join(ranks, weighted.src == ranks.id)
+            .select(F.col("dst").alias("id"), F.expr("rank div out_deg").alias("c"))
+            .groupBy("id")
+            .agg(F.sum("c").alias("s"))
+        )
+
+    return _fixpoint(seed, step, iterations, edges=weighted)
+
+
 def pagerank_int(
     nodes: DataFrame,
     edges: DataFrame,
@@ -292,60 +389,24 @@ def pagerank_int(
     rank div out_degree, update (15*base + 85*sum) div 100. Dangling
     nodes keep their 0.15 floor (their mass leaks, as in the simple
     formulation — acceptable for a similarity-graph centrality signal).
-
-    The edge list (possibly a whole LSH pipeline upstream) materializes
-    ONCE with its out-degrees attached (per-src window on the persisted
-    pass); each iteration is then one join + one groupBy(dst) shuffle
-    over it. Rounds are fixed (not convergence-tested), so the plan is
-    static and the driver never inspects data. Lineage control: ranks
-    localCheckpoint every ``checkpoint_every`` rounds (lineage growth is
-    linear in rounds — one join per round — so a short run compiles into
-    ONE plan with zero intermediate jobs, where checkpointing every round
-    paid 1 extra full job per round of pure scheduler overhead on small
-    graphs); the final ranks are always checkpointed eagerly so the
-    persisted edge list can be released before returning.
+    Rounds are fixed (not convergence-tested), so the plan is static and
+    no data is read back between rounds.
     """
-    n_nodes = nodes.count()
-    base = (10**12) // n_nodes
-    # edge list + degrees evaluate ONCE: the upstream pair generation can
-    # be a whole LSH pipeline, and every iteration references both.
-    weighted = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .withColumn("out_deg", F.count("*").over(Window.partitionBy("src")))
-        .persist()
-    )
-    ids = nodes.select(F.col(node_col).alias("id"))
-    ranks = ids.select("id", F.lit(base).alias("rank"))
+    base = (10**12) // nodes.count()
     floor_term = (15 * base) // 100
-    checkpoint_every = 8
-    checkpointed: list[DataFrame] = []
-    try:
-        for it in range(iterations):
-            contrib = (
-                weighted.join(ranks, weighted.src == ranks.id)
-                .select(
-                    F.col("dst").alias("id"),
-                    F.expr("rank div out_deg").alias("c"),
-                )
-                .groupBy("id")
-                .agg(F.sum("c").alias("s"))
-            )
-            ranks = ids.join(contrib, "id", "left_outer").select(
-                "id",
-                (
-                    F.lit(floor_term)
-                    + F.expr("(85 * coalesce(s, 0)) div 100")
-                ).cast("long").alias("rank"),
-            )
-            last = it == iterations - 1
-            if last or (it + 1) % checkpoint_every == 0:
-                ranks = ranks.localCheckpoint(eager=True)
-                for prev in checkpointed:
-                    release_local_checkpoint(prev)  # superseded rounds
-                checkpointed = [ranks]
-    finally:
-        weighted.unpersist()
-    return ranks
+    ids = nodes.select(F.col(node_col).alias("id"))
+
+    def update(contrib: DataFrame) -> DataFrame:
+        return ids.join(contrib, "id", "left_outer").select(
+            "id",
+            (
+                F.lit(floor_term)
+                + F.expr("(85 * coalesce(s, 0)) div 100")
+            ).cast("long").alias("rank"),
+        )
+
+    seed = ids.select("id", F.lit(base).alias("rank"))
+    return _rank_walk(edges, src_col, dst_col, seed, update, iterations)
 
 
 def personalized_pagerank_int(
@@ -369,59 +430,31 @@ def personalized_pagerank_int(
     rank div out_deg) div 100. Nodes the walk never reaches stay at
     exactly 0, so the result is naturally sparse — at 100 TB the rank
     frontier (not the corpus) is what each iteration shuffles, and the
-    per-iteration cost tracks the seed neighborhood size. Edge list +
-    out-degrees materialize once; ranks localCheckpoint every
-    ``checkpoint_every`` rounds (same bounded-lineage rationale as
-    :func:`pagerank_int` — linear growth, so a short fixed run is one
-    plan with zero intermediate jobs) and always on the final round so
-    the persisted edge list can be released before returning.
+    per-iteration cost tracks the seed neighborhood size.
     """
     base = (10**12) // seeds.count()
-    weighted = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .withColumn("out_deg", F.count("*").over(Window.partitionBy("src")))
-        .persist()
-    )
-    seed_ids = seeds.select(F.col(node_col).alias("id")).distinct()
-    ranks = seed_ids.select("id", F.lit(base).cast("long").alias("rank"))
     floor_term = (15 * base) // 100
-    checkpoint_every = 8
-    checkpointed: list[DataFrame] = []
-    try:
-        for it in range(iterations):
-            contrib = (
-                weighted.join(ranks, weighted.src == ranks.id)
-                .select(
-                    F.col("dst").alias("id"),
-                    F.expr("rank div out_deg").alias("c"),
-                )
-                .groupBy("id")
-                .agg(F.sum("c").alias("s"))
+    seed_ids = seeds.select(F.col(node_col).alias("id")).distinct()
+
+    # full outer of (teleport floor on seeds) and (walk mass): only rows
+    # touched by either term exist — the frontier stays sparse instead of
+    # densifying to every node in the graph.
+    def update(contrib: DataFrame) -> DataFrame:
+        return (
+            seed_ids.select("id", F.lit(floor_term).alias("f"))
+            .join(contrib, "id", "full_outer")
+            .select(
+                "id",
+                (
+                    F.coalesce(F.col("f"), F.lit(0))
+                    + F.expr("(85 * coalesce(s, 0)) div 100")
+                ).cast("long").alias("rank"),
             )
-            # full outer of (teleport floor on seeds) and (walk mass):
-            # only rows touched by either term exist — the frontier stays
-            # sparse instead of densifying to every node in the graph.
-            ranks = (
-                seed_ids.select("id", F.lit(floor_term).alias("f"))
-                .join(contrib, "id", "full_outer")
-                .select(
-                    "id",
-                    (
-                        F.coalesce(F.col("f"), F.lit(0))
-                        + F.expr("(85 * coalesce(s, 0)) div 100")
-                    ).cast("long").alias("rank"),
-                )
-                .filter(F.col("rank") > 0)
-            )
-            last = it == iterations - 1
-            if last or (it + 1) % checkpoint_every == 0:
-                ranks = ranks.localCheckpoint(eager=True)
-                for prev in checkpointed:
-                    release_local_checkpoint(prev)  # superseded rounds
-                checkpointed = [ranks]
-    finally:
-        weighted.unpersist()
-    return ranks
+            .filter(F.col("rank") > 0)
+        )
+
+    seed = seed_ids.select("id", F.lit(base).cast("long").alias("rank"))
+    return _rank_walk(edges, src_col, dst_col, seed, update, iterations)
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -474,14 +507,14 @@ def tree_ancestry(edges: DataFrame, rounds: int = 8) -> DataFrame:
     it. Doubling composes the state with itself — after ``rounds``
     rounds every node whose depth is <= 2^rounds has cur = its root and
     d = its depth (256 deep by default: any realistic hierarchy; raise
-    ``rounds`` logarithmically for pathological chains).
+    ``rounds`` logarithmically for pathological chains). The round count
+    is a fixed limit, not a convergence test: deeper nodes come back
+    part-way up their chain.
 
     Scale shape: each round is ONE equi-join of the state with itself on
-    the node key — 8 narrow shuffles total regardless of depth;
-    localCheckpoint truncates the self-feeding plan like the connected-
-    components fixpoints above.
+    the node key — 8 narrow shuffles total regardless of depth.
     """
-    state = edges.select(
+    seed = edges.select(
         F.col("node"),
         F.when(F.col("parent") == F.col("node"), F.col("node"))
         .otherwise(F.col("parent"))
@@ -490,25 +523,32 @@ def tree_ancestry(edges: DataFrame, rounds: int = 8) -> DataFrame:
         .otherwise(F.lit(1))
         .cast("long")
         .alias("depth"),
-    ).localCheckpoint(eager=True)
-    for _ in range(rounds):
+    )
+
+    def step(state: DataFrame) -> DataFrame:
         hop = state.select(
             F.col("node").alias("j_node"),
             F.col("cur").alias("j_cur"),
             F.col("depth").alias("j_depth"),
         )
-        prev = state
-        state = (
-            state.join(hop, state["cur"] == hop["j_node"])
-            .select(
-                "node",
-                F.col("j_cur").alias("cur"),
-                (F.col("depth") + F.col("j_depth")).alias("depth"),
-            )
-            .localCheckpoint(eager=True)
+        return state.join(hop, state["cur"] == hop["j_node"]).select(
+            "node",
+            F.col("j_cur").alias("cur"),
+            (F.col("depth") + F.col("j_depth")).alias("depth"),
         )
-        release_local_checkpoint(prev)  # superseded round
+
+    state = _fixpoint(seed, step, rounds, reads_twice=True)
     return state.select("node", F.col("cur").alias("root_key"), "depth")
+
+
+def _degrees(e: DataFrame) -> DataFrame:
+    """(node, degree) over an undirected (id_a, id_b) edge list."""
+    return (
+        e.select(F.col("id_a").alias("node"))
+        .unionAll(e.select(F.col("id_b").alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").alias("degree"))
+    )
 
 
 def k_core(
@@ -520,53 +560,36 @@ def k_core(
     long-tail activity does not). Batagelj-Zaversnik peeling, distributed:
     each round drops nodes with degree < k and the edges touching them,
     until a fixpoint. Rounds are peel DEPTH (shallow for real graphs),
-    bounded by ``max_rounds`` — converged-or-raise, never silent.
+    bounded by ``max_rounds``.
 
     ``edges`` is (id_a, id_b) undirected, self-loops ignored. Returns
     (node, degree) of the surviving core with IN-CORE degrees.
 
     Each round: one degree groupBy (map-side combined) + two semi-joins
     of the shrinking edge list — and the edge list ONLY shrinks, so late
-    rounds cost less than early ones. localCheckpoint between rounds
-    truncates the self-feeding plan (same discipline as
-    connected_components); the driver sees one count per round.
+    rounds cost less than early ones, and a round that peels nothing
+    (the same edge count as the round before) is the fixpoint.
     """
-    cur = (
-        edges.filter(F.col("id_a") != F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_edges = cur.count()
-    for _ in range(max_rounds):
-        if n_edges == 0:
-            break
-        degs = (
-            cur.select(F.col("id_a").alias("node"))
-            .unionAll(cur.select(F.col("id_b").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("degree"))
-        )
-        keep = degs.filter(F.col("degree") >= k).select("node")
-        nxt = (
+
+    def step(cur: DataFrame) -> DataFrame:
+        keep = _degrees(cur).filter(F.col("degree") >= k).select("node")
+        return (
             cur.join(keep.withColumnRenamed("node", "id_a"), "id_a", "left_semi")
             .join(keep.withColumnRenamed("node", "id_b"), "id_b", "left_semi")
             .select("id_a", "id_b")
-            .localCheckpoint(eager=True)
         )
-        n_next = nxt.count()
-        release_local_checkpoint(cur)
-        cur, prev_edges, n_edges = nxt, n_edges, n_next
-        if n_next == prev_edges:  # nothing peeled: fixpoint
-            break
-    else:
-        raise RuntimeError(f"k_core did not converge in {max_rounds} rounds")
-    return (
-        cur.select(F.col("id_a").alias("node"))
-        .unionAll(cur.select(F.col("id_b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("degree"))
-    )
+
+    sizes: list[int] = []  # edge count of each round, counted once
+
+    def peeled_nothing(new: DataFrame, old: DataFrame) -> bool:
+        # each call compares a round with the one before
+        if not sizes:
+            sizes.append(old.count())
+        sizes.append(new.count())
+        return sizes[-1] == sizes[-2]
+
+    seed = edges.filter(F.col("id_a") != F.col("id_b")).select("id_a", "id_b").distinct()
+    return _degrees(_fixpoint(seed, step, max_rounds, peeled_nothing, name="k_core"))
 
 
 def hits_int(
@@ -591,68 +614,36 @@ def hits_int(
     bucket degrees, 2 rounds stay far inside int64 even at corpus
     scale (deg 200 -> 1.6e9).
 
-    Each half-round is one join + one groupBy shuffle over the edge
-    list, which materializes once because all four half-rounds
-    reference it; score frames are 2-long rows per node. Rounds are
-    fixed, so the plan is static — no data-dependent driver logic
-    (same contract as :func:`pagerank_int`). Lineage control: the edge
-    list is EAGERLY checkpointed at entry — its upstream plan (LSH
-    signatures + bucket pairs in the similarity-graph family) is the
-    dominant logical subtree, and a lazy persist caches runtime blocks
-    but NOT the analyzed plan, so every one of the 2*rounds references
-    would re-embed it and Catalyst re-analysis would dominate wall time
-    (measured: sim_hits 2.1s -> 5.6s when round 9 swapped the per-round
-    eager checkpoints for lazy persist without truncating the edge-list
-    plan). With the edge plan truncated to a LogicalRDD leaf, the
-    half-round frames themselves are LAZILY persisted (a hub frame is
-    read by the same round's auth update AND the next hub update, so an
-    unpersisted chain would recompute subtrees exponentially) and the
-    FINAL pair is checkpointed in one eager job — one scheduler
-    round-trip for the edges plus one for the result, instead of
-    2*rounds of them.
+    The state is one (id, hub, auth) frame; each half-round is one join
+    + one groupBy shuffle over the edge list. A round reads its fresh hub
+    scores twice (the auth update and the output row), so the previous
+    state is read twice per round.
     """
     ids = nodes.select(F.col(node_col).alias("id"))
-    sym = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint(eager=True)
-    auth = ids.select("id", F.lit(1).cast("long").alias("score"))
-    hub = None
-    inters: list[DataFrame] = []
-    try:
-        for it in range(rounds):
-            hub_sum = (
-                sym.join(auth, sym.dst == auth.id)
-                .groupBy("src")
-                .agg(F.sum("score").alias("s"))
-            )
-            hub = (
-                ids.join(hub_sum, ids.id == hub_sum.src, "left")
-                .select("id", F.coalesce("s", F.lit(0)).cast("long").alias("score"))
-                .persist()
-            )
-            inters.append(hub)
-            auth_sum = (
-                sym.join(hub, sym.src == hub.id)
-                .groupBy("dst")
-                .agg(F.sum("score").alias("s"))
-            )
-            auth = (
-                ids.join(auth_sum, ids.id == auth_sum.dst, "left")
-                .select("id", F.coalesce("s", F.lit(0)).cast("long").alias("score"))
-                .persist()
-            )
-            inters.append(auth)
-        out = (
-            hub.withColumnRenamed("score", "hub")
-            .join(auth.withColumnRenamed("score", "auth"), "id")
-            .select("id", "hub", "auth")
-            .localCheckpoint(eager=True)
+
+    def step(state: DataFrame, sym: DataFrame) -> DataFrame:
+        hub_sum = (
+            sym.join(state, sym.dst == state.id)
+            .groupBy("src")
+            .agg(F.sum("auth").alias("s"))
         )
-        return out
-    finally:
-        for df in inters:
-            df.unpersist()
-        release_local_checkpoint(sym)
+        hub = ids.join(hub_sum, ids.id == hub_sum.src, "left").select(
+            "id", F.coalesce("s", F.lit(0)).cast("long").alias("hub")
+        )
+        auth_sum = (
+            sym.join(hub, sym.src == hub.id)
+            .groupBy("dst")
+            .agg(F.sum("hub").alias("s"))
+        )
+        return hub.join(auth_sum, hub.id == auth_sum.dst, "left").select(
+            "id", "hub", F.coalesce("s", F.lit(0)).cast("long").alias("auth")
+        )
+
+    seed = ids.select(
+        "id", F.lit(0).cast("long").alias("hub"), F.lit(1).cast("long").alias("auth")
+    )
+    sym = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    return _fixpoint(seed, step, rounds, edges=sym, reads_twice=True)
 
 
 def label_propagation_int(
@@ -680,81 +671,46 @@ def label_propagation_int(
 
     Per round: one join (edges x labels) + one (dst, label) count + one
     per-dst struct-max argmax — all keyed shuffles over the EDGE list;
-    label frames are 2-long rows per node. Lineage control: the edge
-    list is EAGERLY checkpointed at entry — its upstream plan (LSH
-    signatures + bucket pairs) is the dominant logical subtree, and a
-    lazy persist caches blocks but not the analyzed plan, so each
-    round's two references would re-embed it and the doubled-per-round
-    label lineage would multiply it further (measured:
-    sim_lpa_communities 2.1s -> 6.1s when round 9 dropped the per-round
-    eager checkpoints without truncating the edge-list plan). With the
-    edge plan truncated, label frames are LAZILY persisted per round (a
-    label frame is read twice — by the neighbor count and by the update
-    join — so an unpersisted chain would recompute subtrees
-    exponentially), the plan is re-truncated every ``checkpoint_every``
-    rounds to bound the 2^rounds logical growth, and the final frame is
-    checkpointed in one eager job. Fixed rounds keep the plan static.
+    label frames are 2-long rows per node, read twice per round (by the
+    neighbor count and by the update join).
     """
     ids = nodes.select(F.col(node_col).alias("id"))
-    sym = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint(eager=True)
-    labels = ids.select("id", F.col("id").alias("label"))
-    persisted: list[DataFrame] = []
-    checkpointed: list[DataFrame] = []
-    checkpoint_every = 4  # double-referenced frames: logical plan doubles
-    # per lazy round, so truncate every 4 rounds (2^4-bounded growth)
-    try:
-        for it in range(rounds):
-            counts = (
-                sym.join(labels, sym.src == labels.id)
-                .groupBy("dst", "label")
-                .agg(F.count("*").alias("cnt"))
+
+    def step(labels: DataFrame, sym: DataFrame) -> DataFrame:
+        counts = (
+            sym.join(labels, sym.src == labels.id)
+            .groupBy("dst", "label")
+            .agg(F.count("*").alias("cnt"))
+        )
+        # argmax by (cnt desc, label asc) as a struct-max aggregation:
+        # max(struct(cnt, -label)) picks the largest count, then the
+        # largest negated label = the SMALLEST label — the same
+        # deterministic tie-break as a row_number window, but
+        # map-side-combinable and sort-free (one hash agg keyed by dst
+        # instead of a full partition sort)
+        winner = (
+            counts.groupBy("dst")
+            .agg(
+                F.max(
+                    F.struct(
+                        F.col("cnt"), (-F.col("label")).alias("neg_label")
+                    )
+                ).alias("m")
             )
-            # argmax by (cnt desc, label asc) as a struct-max aggregation:
-            # max(struct(cnt, -label)) picks the largest count, then the
-            # largest negated label = the SMALLEST label — the same
-            # deterministic tie-break as a row_number window, but
-            # map-side-combinable and sort-free (one hash agg keyed by dst
-            # instead of a full partition sort)
-            winner = (
-                counts.groupBy("dst")
-                .agg(
-                    F.max(
-                        F.struct(
-                            F.col("cnt"), (-F.col("label")).alias("neg_label")
-                        )
-                    ).alias("m")
-                )
-                .select(
-                    F.col("dst").alias("id"), (-F.col("m.neg_label")).alias("nlab")
-                )
+            .select(
+                F.col("dst").alias("id"), (-F.col("m.neg_label")).alias("nlab")
             )
-            # labels is ids-complete by construction (seeded from ids and
-            # rebuilt ids-sized every round), so the update left-joins the
-            # winners straight onto the previous labels — no ids re-join
-            labels = labels.join(winner, "id", "left").select(
-                "id", F.coalesce("nlab", "label").alias("label")
-            )
-            if (it + 1) % checkpoint_every == 0 and it != rounds - 1:
-                labels = labels.localCheckpoint(eager=True)
-                for df in persisted:
-                    df.unpersist()
-                persisted = []
-                for df in checkpointed:
-                    release_local_checkpoint(df)
-                checkpointed = [labels]
-            else:
-                labels = labels.persist()
-                persisted.append(labels)
-        out = labels.localCheckpoint(eager=True)
-        return out
-    finally:
-        for df in persisted:
-            df.unpersist()
-        for df in checkpointed:
-            release_local_checkpoint(df)
-        release_local_checkpoint(sym)
+        )
+        # labels is ids-complete by construction (seeded from ids and
+        # rebuilt ids-sized every round), so the update left-joins the
+        # winners straight onto the previous labels — no ids re-join
+        return labels.join(winner, "id", "left").select(
+            "id", F.coalesce("nlab", "label").alias("label")
+        )
+
+    seed = ids.select("id", F.col("id").alias("label"))
+    sym = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    return _fixpoint(seed, step, rounds, edges=sym, reads_twice=True)
 
 
 def clustering_coefficient(edges: DataFrame) -> DataFrame:

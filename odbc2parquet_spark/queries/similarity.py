@@ -47,6 +47,15 @@ def _lsh_graph_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cachereg.memo(spark, ("lsh_graph_pairs", sf_dir), path, build)
 
 
+def _lsh_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The :func:`_lsh_graph_pairs` graph as directed (src, dst) edges,
+    both orientations of every pair."""
+    pairs = _lsh_graph_pairs(spark, sf_dir)
+    return pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).union(
+        pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+    )
+
+
 _DOT = (
     "list_sum(list_transform(list_zip(a.embedding, b.embedding), "
     "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
@@ -1181,10 +1190,7 @@ def sim_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.graph import pagerank_int
 
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = _lsh_graph_pairs(spark, sf_dir)
-    sym = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).union(
-        pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-    )
+    sym = _lsh_graph_edges(spark, sf_dir)
     nodes = emb.select(F.col("vec_id").alias("id"))
     return pagerank_int(nodes, sym, iterations=3)
 
@@ -1224,10 +1230,7 @@ def sim_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.graph import personalized_pagerank_int
 
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = _lsh_graph_pairs(spark, sf_dir)
-    sym = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).union(
-        pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-    )
+    sym = _lsh_graph_edges(spark, sf_dir)
     seeds = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("id")
     )
@@ -1673,30 +1676,43 @@ def sim_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_kcore_cert",
-    oracle="""
-    SELECT CAST(212 AS BIGINT) AS n_nodes, CAST(1564 AS BIGINT) AS sum_degree,
-           CAST(3 AS BIGINT) AS min_node, CAST(498 AS BIGINT) AS max_node,
-           CAST(55430 AS BIGINT) AS sum_nodes
+    oracle="WITH RECURSIVE "
+    + _KNN_CTE
+    + """,
+    e AS (SELECT DISTINCT vec_id AS a, neighbor_id AS b FROM knn WHERE vec_id <> neighbor_id),
+    arcs AS (SELECT a AS x, b AS y FROM e UNION ALL SELECT b, a FROM e),
+    peel(r, x, y) AS (
+        SELECT 0, x, y FROM arcs
+        UNION ALL
+        SELECT r + 1, x, y FROM (
+            SELECT r, x, y,
+                   COUNT(*) OVER (PARTITION BY x) AS dx,
+                   COUNT(*) OVER (PARTITION BY y) AS dy
+            FROM peel WHERE r < 50
+        ) WHERE dx >= 6 AND dy >= 6
+    ),
+    core AS (SELECT x AS node, COUNT(*) AS degree FROM peel WHERE r = 50 GROUP BY x)
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes, CAST(SUM(degree) AS BIGINT) AS sum_degree,
+           CAST(MIN(node) AS BIGINT) AS min_node, CAST(MAX(node) AS BIGINT) AS max_node,
+           CAST(SUM(node) AS BIGINT) AS sum_nodes
+    FROM core
     """,
 )
 def sim_kcore_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """6-core of the approximate 5-NN graph (operators/graph.k_core,
     Batagelj-Zaversnik peeling): the dense-subgraph miner behind
     collusion / engagement-farm detection — organic long-tail structure
-    peels away, tightly inter-linked clusters survive. Iterative (no
-    recursive-SQL dual), so like tx_bpe_learn50 the oracle pins the
-    deterministic output — here a five-field certificate (node count,
-    in-core degree sum, min/max/sum of node ids) of the converged core;
-    the ALGORITHM is pytest-pinned against a pure-Python reference peel
-    on seeded random graphs with a planted clique
-    (tests/test_operators.test_k_core_matches_reference_peel). Each peel
-    round is one map-side-combined degree count + two semi-joins of the
-    only-shrinking edge list.
+    peels away, tightly inter-linked clusters survive. Output is a
+    five-field certificate (node count, in-core degree sum, min/max/sum of
+    node ids) of the converged core. Each peel round is one
+    map-side-combined degree count + two semi-joins of the only-shrinking
+    edge list.
 
-    NOTE: the oracle pins constants measured on the sf0.01 corpus (the
-    driver's correctness gate); running this pair at another SF
-    mismatches BY DESIGN — the algorithm itself is SF-independent and
-    pytest-pinned.
+    The oracle peels the same k-NN edge list in a recursive CTE: the edges
+    in both orientations, so one window per endpoint counts its degree,
+    for 50 rounds (``k_core``'s cap). Peeling reaches its fixpoint well
+    before that and later rounds change nothing; an emptied core stops
+    the recursion early and leaves no round-50 rows.
     """
     from odbc2parquet_spark.operators.graph import k_core
 
@@ -2384,10 +2400,7 @@ def sim_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.graph import hits_int
 
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = _lsh_graph_pairs(spark, sf_dir)
-    sym = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).union(
-        pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-    )
+    sym = _lsh_graph_edges(spark, sf_dir)
     nodes = emb.select(F.col("vec_id").alias("id"))
     return hits_int(nodes, sym, rounds=2)
 
@@ -2437,10 +2450,7 @@ def sim_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.graph import label_propagation_int
 
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = _lsh_graph_pairs(spark, sf_dir)
-    sym = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).union(
-        pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-    )
+    sym = _lsh_graph_edges(spark, sf_dir)
     nodes = emb.select(F.col("vec_id").alias("id"))
     return label_propagation_int(nodes, sym, rounds=3)
 

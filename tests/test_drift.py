@@ -5,6 +5,7 @@ a changed hash."""
 import pytest
 from pyspark.sql import functions as F
 
+from odbc2parquet_spark.operators import graph
 from odbc2parquet_spark.operators.drift import (
     chi_square_independence,
     covariance_matrix,
@@ -262,21 +263,81 @@ def test_two_pass_ops_leave_no_persistent_rdds(spark):
     assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == 0
 
 
-def test_iterative_fixpoints_release_superseded_rounds(spark):
-    """Iterative operators checkpoint per round; every SUPERSEDED round's
-    blocks must be explicitly released, so after a run at most the final
-    state (plus nothing else) stays registered."""
-    from odbc2parquet_spark.operators.graph import connected_components
+def _persistent_rdd_ids(spark):
+    """Ids of the RDDs registered as persistent (checkpoints and persists);
+    comparing id sets, not sizes, ignores older registrations the
+    ContextCleaner frees meanwhile."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
-    base = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+#: graph operator -> a call on (id) nodes, (src, dst) edges and the same
+#: edges as (id_a, id_b) pairs, with enough fixed rounds to pass an
+#: intermediate truncation
+_FIXPOINT_RUNS = {
+    "connected_components": lambda nodes, edges, pairs: graph.connected_components(nodes, pairs),
+    "connected_components_star": lambda nodes, edges, pairs: graph.connected_components_star(
+        nodes, pairs
+    ),
+    "k_core": lambda nodes, edges, pairs: graph.k_core(pairs, 1),
+    "pagerank_int": lambda nodes, edges, pairs: graph.pagerank_int(nodes, edges, iterations=5),
+    "personalized_pagerank_int": lambda nodes, edges, pairs: graph.personalized_pagerank_int(
+        edges, nodes.filter(F.col("id") % 5 == 0), iterations=5
+    ),
+    "hits_int": lambda nodes, edges, pairs: graph.hits_int(nodes, edges, rounds=5),
+    "label_propagation_int": lambda nodes, edges, pairs: graph.label_propagation_int(
+        nodes, edges, rounds=5
+    ),
+    "tree_ancestry": lambda nodes, edges, pairs: graph.tree_ancestry(
+        nodes.select(F.col("id").alias("node"), F.expr("id div 2").alias("parent"))
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(_FIXPOINT_RUNS))
+def test_iterative_fixpoints_release_superseded_rounds(spark, name):
+    """Iterative operators checkpoint or persist their rounds; every
+    SUPERSEDED round's blocks (and the pinned edge list) must be
+    explicitly released, so after a run at most the final state (plus
+    nothing else) stays registered."""
+    base = _persistent_rdd_ids(spark)
     nodes = spark.createDataFrame([(i,) for i in range(20)], ["id"])
     edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(0, 18, 2)], ["src", "dst"]
+        [(i, i + 1) for i in range(0, 18, 2)] + [(i, i + 3) for i in range(0, 16, 4)],
+        ["src", "dst"],
     )
-    connected_components(nodes, edges, node_col="id", src_col="src", dst_col="dst").count()
-    after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    # only the final labels checkpoint may remain registered
-    assert after - base <= 1
+    pairs = edges.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
+    _FIXPOINT_RUNS[name](nodes, edges, pairs).count()
+    # only the final state's checkpoint may remain registered
+    assert len(_persistent_rdd_ids(spark) - base) <= 1
+
+
+@pytest.mark.parametrize("tested", [False, True])
+def test_fixpoint_releases_everything_when_a_step_raises(spark, tested):
+    """A step that raises part-way leaves nothing registered: the pinned
+    edge list, the last truncation and the lazily persisted rounds are
+    all released (a fixed-round loop with a doubly-read state fails on
+    round 6, after the round-4 truncation; a convergence-tested loop on
+    round 3)."""
+    base = _persistent_rdd_ids(spark)
+    edges = spark.range(10).select(F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
+    calls = []
+
+    def step(state, edges):
+        calls.append(1)
+        if len(calls) == (3 if tested else 6):
+            raise ValueError("step failed")
+        # references the state twice, like a doubly-read fixpoint
+        return state.join(edges, state.id == edges.src, "left_semi").union(state).distinct()
+
+    def never(new, old):
+        return new.count() < 0
+
+    with pytest.raises(ValueError, match="step failed"):
+        graph._fixpoint(
+            spark.range(10), step, 10, never if tested else None,
+            edges=edges, reads_twice=not tested, name="test",
+        )
+    assert not _persistent_rdd_ids(spark) - base
 
 
 def test_weighted_median_known_values(spark):

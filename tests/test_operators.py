@@ -275,6 +275,25 @@ def test_star_components_deep_chain_matches_propagation(spark):
     assert star_s == prop_s == {i: 0 for i in range(m)}
 
 
+@pytest.mark.parametrize(
+    "name", ["connected_components", "connected_components_star"]
+)
+def test_components_raise_at_their_cap(spark, name):
+    """Reaching ``max_iterations`` unconverged is an error, never a silent
+    partial labeling: the 16-node chain needs more than 3 rounds in both
+    engines, and the failed run leaves nothing registered."""
+    from odbc2parquet_spark.operators import graph as G
+
+    m = 16
+    nodes = spark.createDataFrame([(i,) for i in range(m)], ["id"])
+    edges = spark.createDataFrame([(i, i + 1) for i in range(m - 1)], ["id_a", "id_b"])
+    registered = spark.sparkContext._jsc.getPersistentRDDs
+    base = set(registered().keys())
+    with pytest.raises(RuntimeError, match=f"^{name} did not converge in 3 rounds$"):
+        getattr(G, name)(nodes, edges, max_iterations=3)
+    assert not set(registered().keys()) - base
+
+
 @pytest.mark.slow
 def test_star_components_random_graph_matches_propagation(spark):
     import random

@@ -791,9 +791,9 @@ def test_markov_removal_effect_zero_conversion_corpus(spark):
 
 
 def test_pagerank_intermediate_checkpoint_branch(spark):
-    # iterations > checkpoint_every exercises the every-8-rounds
-    # checkpoint path added in round 9; invariants: one row per node,
-    # total rank mass never exceeds the teleport-complete 10^12
+    # 9 iterations pass the intermediate truncations (every 4 rounds:
+    # rounds 4 and 8) before the last-round checkpoint; invariants: one
+    # row per node, total rank mass never exceeds the teleport-complete 10^12
     from odbc2parquet_spark.operators.graph import pagerank_int
 
     nodes = spark.createDataFrame([(i,) for i in range(6)], ["id"])
@@ -804,6 +804,50 @@ def test_pagerank_intermediate_checkpoint_branch(spark):
     assert len(out) == 6
     assert sum(r["rank"] for r in out) <= 10**12
     assert all(r["rank"] >= (15 * (10**12 // 6)) // 100 for r in out)
+
+
+def test_fixed_round_fixpoints_sql_executions(spark):
+    """The fixed-round cadence, pinned by the SQL executions each operator
+    runs while it is built, at the round counts the registry queries use:
+    a count taken before the loop (PageRank's nodes, PPR's seeds) or the
+    edge-list checkpoint, plus ONE eager checkpoint of the last round —
+    no per-round jobs. A cadence change shows up here, not only as a
+    bench regression."""
+    from odbc2parquet_spark.operators import graph as G
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_execution_id():
+        # ids only grow; the status store's size stops growing once it
+        # holds spark.sql.ui.retainedExecutions entries in a long run
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return store.executionsList().last().executionId()
+
+    nodes = spark.createDataFrame([(i,) for i in range(12)], ["id"])
+    edges = spark.createDataFrame(
+        [(i, (i + 1) % 12) for i in range(12)] + [(i, (i + 5) % 12) for i in range(0, 12, 3)],
+        ["src", "dst"],
+    )
+    runs = {
+        "pagerank_int": lambda: G.pagerank_int(nodes, edges, iterations=3),
+        "personalized_pagerank_int": lambda: G.personalized_pagerank_int(
+            edges, nodes.filter(F.col("id") % 4 == 0), iterations=3
+        ),
+        "hits_int": lambda: G.hits_int(nodes, edges, rounds=2),
+        "label_propagation_int": lambda: G.label_propagation_int(nodes, edges, rounds=3),
+    }
+    nodes.count()  # at least one execution on record
+    got = {}
+    for name, run in runs.items():
+        before = last_execution_id()
+        run()
+        got[name] = last_execution_id() - before
+    assert got == {
+        "pagerank_int": 2,
+        "personalized_pagerank_int": 2,
+        "hits_int": 2,
+        "label_propagation_int": 2,
+    }
 
 
 def test_value_anomalies_constant_group_no_nan_rows(spark):
