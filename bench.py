@@ -430,8 +430,8 @@ def scaling_mode() -> None:
     Runs the SCALING_SET at an amplified scale directory (default
     ``.sfdata/sf10`` = $SPARK_GRAFT_SCALING_FACTOR (default 100) x
     $SPARK_GRAFT_SF_DIR, generated via tools/make_sfbig.py if absent)
-    at TWO core counts — the session's $SPARK_GRAFT_CPUS (default 32)
-    and $SPARK_GRAFT_SCALING_LOW_CPUS (default 8) — each in a fresh
+    at TWO core counts — the session's $SPARK_GRAFT_CPUS (default: the
+    host's CPUs) and $SPARK_GRAFT_SCALING_LOW_CPUS (default 8) — each in a fresh
     subprocess (the master string is fixed at session creation, so two
     core counts need two JVMs), each with SPARK_GRAFT_BENCH_ISOLATE=1
     (per-query cold caches: Spark's CacheManager matches cached plans
@@ -457,7 +457,9 @@ def scaling_mode() -> None:
              base_dir, amp_dir, factor],
             check=True,
         )
-    cpus_hi = int(os.environ.get("SPARK_GRAFT_CPUS", "32") or "32")
+    from odbc2parquet_spark.session import local_cpus
+
+    cpus_hi = int(local_cpus())
     cpus_lo = int(os.environ.get("SPARK_GRAFT_SCALING_LOW_CPUS", "8"))
     runs: dict[int, dict[str, float]] = {}
     for cpus in (cpus_hi, cpus_lo):

@@ -354,10 +354,12 @@ def main(argv: list[str] | None = None) -> int:
             "Write the values into the SQL instead."
         )
 
-    from odbc2parquet_spark.session import get_spark
+    from odbc2parquet_spark import session
 
-    spark = get_spark("cli")
+    spark = session.get_spark("cli")
     spark.sparkContext.setLogLevel(log_level_for(args.verbose, args.quiet))
+    if args.verbose and not args.quiet:
+        print(f"odbc2parquet_spark: class-data sharing: {session.CDS}", file=sys.stderr)
 
     if args.cmd == "list-drivers":
         from odbc2parquet_spark.sources.listing import list_drivers

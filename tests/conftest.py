@@ -3,7 +3,8 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package, whatever the working directory
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Tests run on sf0.001 (KB-scale tables); measured per-action latency on
 # this box is ~0.22s under local[8] vs ~0.55s under local[32] — stage
