@@ -3,28 +3,101 @@ decoded via Arrow-batched Pandas UDFs.
 
 The pattern for image/audio/video at 100 TB: the payload travels as a
 ``binary`` column next to typed metadata; decode/feature-extract runs as
-``mapInPandas`` so each task processes Arrow record batches (no per-row
-Python), and partitioning/pushdown operate on the metadata columns only —
-the binary column is never read unless selected.
+``mapInPandas`` so each task receives Arrow record batches, and
+partitioning/pushdown operate on the metadata columns only — the binary
+column is never read unless selected. Inside a batch the decoders loop
+over the payloads in Python (numpy does the sample and pixel
+arithmetic). Every operator runs through one batch map,
+:func:`_map_payloads`, and each format has one decoder
+(:func:`_bmp_pixels`, :func:`_pcm16`).
 
-Header decode is REAL: ``parse_image_header`` parses actual BMP/PNG/GIF/
-JPEG file structure in pure Python, and ``encode_bmp``/``decode_image_
-headers`` round-trip genuine BMP files through the pipeline. Only pixel
-decoding (huffman/deflate resampling, model inference) would need codec/
-model libraries absent from this container; those callers fall back to a
-deterministic fake derived from the byte stream so text stand-in corpora
-stay oracle-verifiable end-to-end.
+Decode is REAL: ``parse_image_header`` parses actual BMP/PNG/GIF/JPEG
+file structure in pure Python, 24-bit BMP and 8-bit RGB PNG pixels and
+16-bit PCM samples decode end to end, and the ``encode_*`` operators
+round-trip genuine files through the pipeline. Resampling and model
+inference would need codec/model libraries the package does not depend
+on; those callers (``resize_images``, ``embed_payloads`` and the
+non-image fallback of ``decode_features``) use a deterministic stand-in
+derived from the byte stream so text stand-in corpora stay
+oracle-verifiable end-to-end.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+import math
+import struct
+import zlib
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from odbc2parquet_spark.operators.similarity import banded_hamming_pairs
+
+#: what a decoder raises for a payload it cannot decode
+_CORRUPT = (ValueError, zlib.error, struct.error)
+
+
+def _map_payloads(
+    df: DataFrame,
+    schema: str,
+    rows: Callable[[object, object], list[tuple]],
+    drop_corrupt: bool = False,
+    col: str = "payload",
+    read: Callable = bytes,
+) -> DataFrame:
+    """The one batch map: ``mapInPandas`` over (doc_id, ``col``), where
+    ``rows(doc_id, read(value))`` returns the list of output tuples of one
+    input row, in ``schema`` order. A payload whose decode raises is
+    quarantined instead of failing the stage (at 100 TB a corrupt object
+    must not kill the task): one row of NULLs after its doc_id, or no
+    rows when ``drop_corrupt``."""
+    names = [field.split()[0] for field in schema.split(",")]
+    blank = (None,) * (len(names) - 1)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out: list[tuple] = []
+            nulls = False
+            for doc_id, value in zip(pdf["doc_id"], pdf[col]):
+                try:
+                    out += rows(doc_id, read(value))
+                except _CORRUPT:
+                    if not drop_corrupt:
+                        out.append((doc_id, *blank))
+                        nulls = True
+            # a NULL turns an int column float64, which rounds longs above
+            # 2^53 (the 56/63-bit image hashes): keep Python ints then
+            yield pd.DataFrame(out, columns=names, dtype=object if nulls else None)
+
+    return df.select("doc_id", col).mapInPandas(run, schema)
+
+
+#: output schema of the encoders: a payload column plus its metadata
+PAYLOAD_SCHEMA = "doc_id long, payload binary, mime string, n_bytes long"
+
+
+def _encode(
+    docs: DataFrame, text_col: str, mime: str, synth: Callable[[bytes, int], bytes]
+) -> DataFrame:
+    """Each document's text becomes one ``mime`` payload,
+    ``synth(utf-8 bytes, n_chars)``."""
+
+    def rows(doc_id, text: str) -> list[tuple]:
+        out = synth(text.encode("utf-8"), len(text))
+        return [(doc_id, bytearray(out), mime, len(out))]
+
+    return _map_payloads(docs, PAYLOAD_SCHEMA, rows, col=text_col, read=str)
+
+
+def _cycle(source: bytes, n: int) -> bytes:
+    """``n`` bytes repeating ``source`` (a zero byte when it is empty)."""
+    source = source or b"\x00"
+    return (source * (n // len(source) + 1))[:n]
+
 
 #: output schema of the decoder — what a real image decode would produce.
 FEATURE_SCHEMA = (
@@ -103,13 +176,9 @@ def synth_bmp(pixel_source: bytes, width: int, height: int) -> bytes:
     + BITMAPINFOHEADER, little-endian) + 4-byte-aligned rows whose pixel
     bytes cycle ``pixel_source``. Output opens in any image viewer; used
     to exercise the real parse path without shipping binary fixtures."""
-    if not pixel_source:
-        pixel_source = b"\x00"
     row = width * 3
     stride = row + (4 - row % 4) % 4
     img_size = stride * height
-    reps = img_size // len(pixel_source) + 1
-    pixels = (pixel_source * reps)[:img_size]
     header = (
         b"BM"
         + (54 + img_size).to_bytes(4, "little")
@@ -125,18 +194,26 @@ def synth_bmp(pixel_source: bytes, width: int, height: int) -> bytes:
         + (2835).to_bytes(4, "little") * 2
         + (0).to_bytes(4, "little") * 2
     )
-    return header + pixels
+    return header + _cycle(pixel_source, img_size)
 
 
-def _decode_real(payload: bytes) -> tuple[int, int, int]:
-    """Real decoder: header-parse BMP/PNG/GIF/JPEG bytes. Raises
-    NotImplementedError for non-image payloads (callers fall back to the
-    deterministic fake so text stand-in corpora stay verifiable)."""
-    try:
-        _, w, h, c = parse_image_header(bytes(payload))
-        return w, h, c
-    except ValueError as exc:
-        raise NotImplementedError("payload is not a recognized image") from exc
+def _bmp_pixels(p: bytes) -> np.ndarray:
+    """The (h, w, 3) B,G,R pixel grid of an uncompressed 24-bit BMP, rows
+    in file order (bottom-up for a positive height), 4-byte row padding
+    stripped. Raises ValueError for a wrong magic, a non-24-bit image,
+    non-positive dimensions or a truncated pixel array."""
+    if len(p) < 54 or p[:2] != b"BM":
+        raise ValueError("not a BMP")
+    off = int.from_bytes(p[10:14], "little")
+    w = int.from_bytes(p[18:22], "little", signed=True)
+    h = int.from_bytes(p[22:26], "little", signed=True)
+    if int.from_bytes(p[28:30], "little") != 24 or w <= 0 or h <= 0:
+        raise ValueError("not an uncompressed 24-bit BMP")
+    stride = w * 3 + (4 - (w * 3) % 4) % 4
+    data = np.frombuffer(p[off : off + stride * h], np.uint8)
+    if len(data) < stride * h:
+        raise ValueError("truncated pixel array")
+    return data.reshape(h, stride)[:, : w * 3].reshape(h, w, 3)
 
 
 def _decode_fake(payload: bytes) -> tuple[int, int, int, int]:
@@ -151,35 +228,23 @@ def _decode_fake(payload: bytes) -> tuple[int, int, int, int]:
 
 
 def decode_features(binary_df: DataFrame) -> DataFrame:
-    """mapInPandas decode: Arrow batches in, feature columns out.
+    """mapInPandas decode: Arrow batches in, feature columns out. A real
+    image header gives its dimensions (checksum -1); any other payload
+    falls back to :func:`_decode_fake`, so text stand-in corpora stay
+    verifiable.
 
     Column pruning matters: the plan reads only (doc_id, payload); metadata
     columns not consumed by the UDF are dropped before the Python boundary.
     """
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, c = _decode_real(payload)
-                    checksum = -1
-                except NotImplementedError:
-                    w, h, c, checksum = _decode_fake(payload)
-                rows.append((doc_id, len(payload), w, h, c, checksum))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_bytes",
-                    "fake_width",
-                    "fake_height",
-                    "fake_channels",
-                    "checksum",
-                ],
-            )
+    def rows(doc_id, p: bytes) -> list[tuple]:
+        try:
+            _, w, h, c = parse_image_header(p)
+        except ValueError:
+            return [(doc_id, len(p), *_decode_fake(p))]
+        return [(doc_id, len(p), w, h, c, -1)]
 
-    return binary_df.select("doc_id", "payload").mapInPandas(decode_batches, FEATURE_SCHEMA)
+    return _map_payloads(binary_df, FEATURE_SCHEMA, rows)
 
 
 def frame_sample(binary_df: DataFrame, every_n_bytes: int = 97) -> DataFrame:
@@ -208,15 +273,6 @@ RESIZE_SCHEMA = (
 )
 
 
-def _resize_fake(payload: bytes, target: int) -> bytes:
-    """Deterministic stand-in for pixel resampling: cycle the byte stream
-    to the target buffer size (floor-cycles + prefix)."""
-    if not payload:
-        return b"\x00" * target
-    reps = target // len(payload) + 1
-    return (payload * reps)[:target]
-
-
 def resize_images(
     binary_df: DataFrame, target_w: int = 16, target_h: int = 12, channels: int = 3
 ) -> DataFrame:
@@ -225,40 +281,19 @@ def resize_images(
     Real pipeline shape: mapInPandas over (id, payload) with the resized
     payload returned as a binary column (so downstream stages keep
     operating on columnar binary) plus verifiable metadata. The pixel
-    resample itself is stubbed (no codec libs here): tries PIL, falls back
-    to deterministic byte-cycling the oracle can recompute.
+    resample itself is a stand-in: every payload, image or text, is
+    byte-cycled to the target size, which the oracle recomputes; no
+    header is parsed.
     """
     target = target_w * target_h * channels
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                payload = bytes(payload)
-                # Pixel resampling needs a codec regardless of format, so
-                # both real-image and text payloads take the deterministic
-                # byte-cycle resize; real headers are still validated.
-                resized = _resize_fake(payload, target)
-                checksum = sum(resized) % 1_000_000_007
-                rows.append(
-                    (doc_id, target_w, target_h, target, checksum, bytearray(resized))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "out_width",
-                    "out_height",
-                    "out_n_bytes",
-                    "out_checksum",
-                    "resized",
-                ],
-            )
+    def rows(doc_id, p: bytes) -> list[tuple]:
+        resized = _cycle(p, target)
+        checksum = sum(resized) % 1_000_000_007
+        return [(doc_id, target_w, target_h, target, checksum, bytearray(resized))]
 
-    return binary_df.select("doc_id", "payload").mapInPandas(run, RESIZE_SCHEMA)
+    return _map_payloads(binary_df, RESIZE_SCHEMA, rows)
 
-
-BMP_SCHEMA = "doc_id long, payload binary, mime string, n_bytes long"
 
 HEADER_SCHEMA = "doc_id long, fmt string, width int, height int, channels int"
 
@@ -271,17 +306,9 @@ def encode_bmp(docs: DataFrame, text_col: str = "text") -> DataFrame:
     This is the ingestion-side twin of decode: mapInPandas over Arrow
     batches producing a binary column of genuine image files, so the
     decode stage downstream exercises its real parser, not the fake."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                raw = str(text).encode("utf-8")
-                bmp = synth_bmp(raw, len(str(text)) % 64 + 1, len(str(text)) % 48 + 1)
-                rows.append((doc_id, bytearray(bmp), "image/bmp", len(bmp)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload", "mime", "n_bytes"])
-
-    return docs.select("doc_id", text_col).mapInPandas(run, BMP_SCHEMA)
+    return _encode(
+        docs, text_col, "image/bmp", lambda raw, n: synth_bmp(raw, n % 64 + 1, n % 48 + 1)
+    )
 
 
 def decode_image_headers(binary_df: DataFrame) -> DataFrame:
@@ -289,21 +316,9 @@ def decode_image_headers(binary_df: DataFrame) -> DataFrame:
     (BMP/PNG/GIF/JPEG) into typed metadata. Unrecognized payloads yield
     NULL metadata instead of failing the batch — at 100 TB a corrupt
     object must quarantine, not kill the stage."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    fmt, w, h, c = parse_image_header(bytes(payload))
-                except ValueError:
-                    fmt, w, h, c = None, None, None, None
-                rows.append((doc_id, fmt, w, h, c))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "fmt", "width", "height", "channels"]
-            )
-
-    return binary_df.select("doc_id", "payload").mapInPandas(run, HEADER_SCHEMA)
+    return _map_payloads(
+        binary_df, HEADER_SCHEMA, lambda doc_id, p: [(doc_id, *parse_image_header(p))]
+    )
 
 
 EMBED_SCHEMA = "doc_id long, embedding array<double>"
@@ -320,28 +335,21 @@ def embed_payloads(binary_df: DataFrame, dim: int = 8) -> DataFrame:
     mapInPandas, column pruning to (doc_id, payload), array<double>
     output column ready for operators/similarity.
     """
-    import hashlib
 
-    def embed_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                payload = bytes(payload)
-                vec = [
-                    round(
-                        int(hashlib.md5(payload + b":" + str(j).encode()).hexdigest()[:6], 16)
-                        / 16777216.0,
-                        6,
-                    )
-                    for j in range(dim)
-                ]
-                rows.append((doc_id, vec))
-            yield pd.DataFrame(rows, columns=["doc_id", "embedding"])
+    def rows(doc_id, p: bytes) -> list[tuple]:
+        vec = [
+            round(
+                int(hashlib.md5(p + b":" + str(j).encode()).hexdigest()[:6], 16)
+                / 16777216.0,
+                6,
+            )
+            for j in range(dim)
+        ]
+        return [(doc_id, vec)]
 
-    return binary_df.select("doc_id", "payload").mapInPandas(embed_batches, EMBED_SCHEMA)
+    return _map_payloads(binary_df, EMBED_SCHEMA, rows)
 
 
-WAV_SCHEMA = "doc_id long, payload binary, mime string, n_bytes long"
 AUDIO_HEADER_SCHEMA = (
     "doc_id long, fmt string, sample_rate int, channels int, bits int, "
     "n_samples long, duration_ms long"
@@ -355,13 +363,9 @@ def synth_wav(
     (RIFF size, fmt chunk with rate/channels/bits, data chunk) + sample
     bytes cycling ``sample_source``. Output plays in any audio tool; used
     to exercise the real parse path without shipping binary fixtures."""
-    if not sample_source:
-        sample_source = b"\x00"
     block_align = channels * bits // 8
     byte_rate = sample_rate * block_align
     data_size = n_samples * block_align
-    reps = data_size // len(sample_source) + 1
-    data = (sample_source * reps)[:data_size]
     header = (
         b"RIFF"
         + (36 + data_size).to_bytes(4, "little")
@@ -377,7 +381,20 @@ def synth_wav(
         + b"data"
         + data_size.to_bytes(4, "little")
     )
-    return header + data
+    return header + _cycle(sample_source, data_size)
+
+
+def _riff_chunks(p: bytes) -> Iterator[tuple[bytes, int, int]]:
+    """(chunk id, body offset, declared body size) of each chunk of a
+    RIFF/WAVE payload, in file order. Raises ValueError for a non-WAV
+    payload."""
+    if len(p) < 12 or p[:4] != b"RIFF" or p[8:12] != b"WAVE":
+        raise ValueError("not a RIFF/WAVE payload")
+    i = 12
+    while i + 8 <= len(p):
+        size = int.from_bytes(p[i + 4 : i + 8], "little")
+        yield p[i : i + 4], i + 8, size
+        i += 8 + size + (size % 2)  # RIFF chunks are word-aligned
 
 
 def parse_wav_header(p: bytes) -> tuple[str, int, int, int, int, int]:
@@ -388,24 +405,18 @@ def parse_wav_header(p: bytes) -> tuple[str, int, int, int, int, int]:
     This parses actual container structure — the RIFF chunk walk handles
     any chunk order and extra chunks (LIST/INFO etc.), exactly what a
     production audio ingest needs before handing samples to a codec."""
-    if len(p) < 12 or p[:4] != b"RIFF" or p[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    i = 12
     rate = channels = bits = None
     data_size = None
-    while i + 8 <= len(p):
-        cid = p[i : i + 4]
-        size = int.from_bytes(p[i + 4 : i + 8], "little")
+    for cid, i, size in _riff_chunks(p):
         if cid == b"fmt " and size >= 16:
-            audio_format = int.from_bytes(p[i + 8 : i + 10], "little")
+            audio_format = int.from_bytes(p[i : i + 2], "little")
             if audio_format != 1:  # PCM only; compressed needs a codec lib
                 raise ValueError(f"unsupported WAVE format {audio_format}")
-            channels = int.from_bytes(p[i + 10 : i + 12], "little")
-            rate = int.from_bytes(p[i + 12 : i + 16], "little")
-            bits = int.from_bytes(p[i + 22 : i + 24], "little")
+            channels = int.from_bytes(p[i + 2 : i + 4], "little")
+            rate = int.from_bytes(p[i + 4 : i + 8], "little")
+            bits = int.from_bytes(p[i + 14 : i + 16], "little")
         elif cid == b"data":
             data_size = size
-        i += 8 + size + (size % 2)  # RIFF chunks are word-aligned
     if not rate or not channels or bits not in (8, 16, 24, 32) or data_size is None:
         raise ValueError("incomplete WAVE structure")
     if not (1 <= channels <= 64) or not (1000 <= rate <= 1_000_000):
@@ -415,50 +426,40 @@ def parse_wav_header(p: bytes) -> tuple[str, int, int, int, int, int]:
     return ("wav", rate, channels, bits, n_samples, n_samples * 1000 // rate)
 
 
+def _pcm16(p: bytes) -> np.ndarray:
+    """The data chunk of a RIFF/WAVE payload as little-endian int16
+    samples widened to int64 (an odd trailing byte is dropped). Raises
+    ValueError for a non-WAV payload, a missing data chunk, or a data
+    chunk that runs past the end of the payload."""
+    for cid, i, size in _riff_chunks(p):
+        if cid == b"data":
+            if i + size > len(p):
+                raise ValueError("truncated data chunk")
+            return np.frombuffer(p, "<i2", size // 2, i).astype(np.int64)
+    raise ValueError("no data chunk")
+
+
 def encode_wav(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Synthesize a REAL audio column: each document's text bytes become
     PCM sample data in a valid WAV whose rate/channels/length derive from
     n_chars — the ingestion-side twin of :func:`decode_audio_headers`."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                raw = str(text).encode("utf-8")
-                n = len(str(text))
-                wav = synth_wav(raw, 8000 + (n % 8) * 1000, n % 2 + 1, n % 500 + 1)
-                rows.append((doc_id, bytearray(wav), "audio/wav", len(wav)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload", "mime", "n_bytes"])
-
-    return docs.select("doc_id", text_col).mapInPandas(run, WAV_SCHEMA)
+    return _encode(
+        docs,
+        text_col,
+        "audio/wav",
+        lambda raw, n: synth_wav(raw, 8000 + (n % 8) * 1000, n % 2 + 1, n % 500 + 1),
+    )
 
 
 def decode_audio_headers(binary_df: DataFrame) -> DataFrame:
     """Real-path audio decode: RIFF chunk-walk each payload into typed
     metadata; corrupt payloads quarantine as NULL rows instead of killing
     the stage (the 100 TB rule)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    fmt, rate, ch, bits, n, ms = parse_wav_header(bytes(payload))
-                except ValueError:
-                    fmt, rate, ch, bits, n, ms = (None,) * 6
-                rows.append((doc_id, fmt, rate, ch, bits, n, ms))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "fmt", "sample_rate", "channels", "bits",
-                    "n_samples", "duration_ms",
-                ],
-            )
-
-    return binary_df.select("doc_id", "payload").mapInPandas(run, AUDIO_HEADER_SCHEMA)
+    return _map_payloads(
+        binary_df, AUDIO_HEADER_SCHEMA, lambda doc_id, p: [(doc_id, *parse_wav_header(p))]
+    )
 
 
-MP4_SCHEMA = "doc_id long, payload binary, mime string, n_bytes long"
 VIDEO_HEADER_SCHEMA = (
     "doc_id long, brand string, timescale int, duration long, "
     "n_top_boxes int, mdat_bytes long, duration_ms long"
@@ -469,14 +470,13 @@ def _box(kind: bytes, body: bytes) -> bytes:
     return (8 + len(body)).to_bytes(4, "big") + kind + body
 
 
-def synth_mp4(payload: bytes, timescale: int, duration: int) -> bytes:
-    """Construct a VALID minimal ISO BMFF (MP4) file: ftyp (isom brand),
-    moov containing an mvhd version-0 box carrying timescale/duration,
-    and an mdat holding the payload bytes. Box sizes/ordering follow the
-    spec (big-endian 32-bit size + fourcc), so any MP4 tool can walk it;
-    used to exercise the real parse path without binary fixtures."""
-    ftyp = _box(b"ftyp", b"isom" + (0).to_bytes(4, "big") + b"isomiso2")
-    mvhd_body = (
+_FTYP = _box(b"ftyp", b"isom" + (0).to_bytes(4, "big") + b"isomiso2")
+
+
+def _mvhd(timescale: int, duration: int) -> bytes:
+    """A version-0 mvhd box carrying ``timescale``/``duration``."""
+    return _box(
+        b"mvhd",
         (0).to_bytes(4, "big")          # version 0 + flags
         + (0).to_bytes(4, "big")        # creation_time
         + (0).to_bytes(4, "big")        # modification_time
@@ -488,11 +488,28 @@ def synth_mp4(payload: bytes, timescale: int, duration: int) -> bytes:
         + b"".join((v).to_bytes(4, "big") for v in
                    (0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000))
         + bytes(24)                        # pre_defined
-        + (2).to_bytes(4, "big")           # next_track_ID
+        + (2).to_bytes(4, "big"),          # next_track_ID
     )
-    moov = _box(b"moov", _box(b"mvhd", mvhd_body))
-    mdat = _box(b"mdat", payload)
-    return ftyp + moov + mdat
+
+
+def synth_mp4(payload: bytes, timescale: int, duration: int) -> bytes:
+    """Construct a VALID minimal ISO BMFF (MP4) file: ftyp (isom brand),
+    moov containing an mvhd version-0 box carrying timescale/duration,
+    and an mdat holding the payload bytes. Box sizes/ordering follow the
+    spec (big-endian 32-bit size + fourcc), so any MP4 tool can walk it;
+    used to exercise the real parse path without binary fixtures."""
+    return _FTYP + _box(b"moov", _mvhd(timescale, duration)) + _box(b"mdat", payload)
+
+
+def _walk_children(p: bytes, start: int, end: int):
+    i = start
+    while i + 8 <= end:
+        size = int.from_bytes(p[i : i + 4], "big")
+        kind = p[i + 4 : i + 8]
+        if size < 8 or i + size > end:
+            raise ValueError("corrupt box size")
+        yield kind, i + 8, i + size
+        i += size
 
 
 def parse_mp4_header(p: bytes) -> tuple[str, int, int, int, int, int]:
@@ -504,36 +521,21 @@ def parse_mp4_header(p: bytes) -> tuple[str, int, int, int, int, int]:
     video ingest performs before handing samples to a demuxer/codec."""
     if len(p) < 12 or p[4:8] != b"ftyp":
         raise ValueError("not an ISO BMFF payload")
-    brand = None
-    timescale = duration = None
-    mdat_bytes = None
+    brand = timescale = duration = mdat_bytes = None
     n_top = 0
-    i = 0
-    while i + 8 <= len(p):
-        size = int.from_bytes(p[i : i + 4], "big")
-        kind = p[i + 4 : i + 8]
-        if size < 8 or i + size > len(p):
-            raise ValueError("corrupt box size")
+    for kind, start, end in _walk_children(p, 0, len(p)):
         n_top += 1
         if kind == b"ftyp":
-            brand = p[i + 8 : i + 12].decode("ascii", "replace")
+            brand = p[start : start + 4].decode("ascii", "replace")
         elif kind == b"moov":
-            j = i + 8
-            while j + 8 <= i + size:
-                bsize = int.from_bytes(p[j : j + 4], "big")
-                bkind = p[j + 4 : j + 8]
-                if bsize < 8 or j + bsize > i + size:
-                    raise ValueError("corrupt moov child")
-                if bkind == b"mvhd":
-                    version = p[j + 8]
-                    if version != 0:
-                        raise ValueError("mvhd v1 needs 64-bit fields")
-                    timescale = int.from_bytes(p[j + 20 : j + 24], "big")
-                    duration = int.from_bytes(p[j + 24 : j + 28], "big")
-                j += bsize
+            for child, c, c_end in _walk_children(p, start, end):
+                if child == b"mvhd":
+                    if c_end - c < 20 or p[c] != 0:
+                        raise ValueError("not a whole version-0 mvhd (v1 needs 64-bit fields)")
+                    timescale = int.from_bytes(p[c + 12 : c + 16], "big")
+                    duration = int.from_bytes(p[c + 16 : c + 20], "big")
         elif kind == b"mdat":
-            mdat_bytes = size - 8
-        i += size
+            mdat_bytes = end - start
     if brand is None or not timescale or duration is None or mdat_bytes is None:
         raise ValueError("incomplete MP4 structure")
     return (brand, timescale, duration, n_top, mdat_bytes, duration * 1000 // timescale)
@@ -543,58 +545,21 @@ def encode_mp4(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Synthesize a REAL video-container column: each document's text
     bytes become the mdat of a valid MP4 whose timescale/duration derive
     from n_chars — the ingestion-side twin of :func:`decode_video_headers`."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                raw = str(text).encode("utf-8")
-                n = len(str(text))
-                mp4 = synth_mp4(raw, 600 + (n % 5) * 100, (n * 31) % 100_000)
-                rows.append((doc_id, bytearray(mp4), "video/mp4", len(mp4)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload", "mime", "n_bytes"])
-
-    return docs.select("doc_id", text_col).mapInPandas(run, MP4_SCHEMA)
+    return _encode(
+        docs,
+        text_col,
+        "video/mp4",
+        lambda raw, n: synth_mp4(raw, 600 + (n % 5) * 100, (n * 31) % 100_000),
+    )
 
 
 def decode_video_headers(binary_df: DataFrame) -> DataFrame:
     """Real-path video-container decode: box-walk each payload into typed
     metadata; corrupt payloads quarantine as NULL rows instead of killing
     the stage (the 100 TB rule)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    vals = parse_mp4_header(bytes(payload))
-                except ValueError:
-                    vals = (None,) * 6
-                rows.append((doc_id, *vals))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "brand", "timescale", "duration",
-                    "n_top_boxes", "mdat_bytes", "duration_ms",
-                ],
-            )
-
-    return binary_df.select("doc_id", "payload").mapInPandas(run, VIDEO_HEADER_SCHEMA)
-
-
-def _wav_data_span(p: bytes) -> tuple[int, int]:
-    """(offset, size) of the PCM data chunk — the RIFF walk of
-    :func:`parse_wav_header`, returning where the samples live."""
-    if len(p) < 12 or p[:4] != b"RIFF" or p[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    i = 12
-    while i + 8 <= len(p):
-        cid = p[i : i + 4]
-        size = int.from_bytes(p[i + 4 : i + 8], "little")
-        if cid == b"data":
-            return i + 8, size
-        i += 8 + size + (size % 2)
-    raise ValueError("no data chunk")
+    return _map_payloads(
+        binary_df, VIDEO_HEADER_SCHEMA, lambda doc_id, p: [(doc_id, *parse_mp4_header(p))]
+    )
 
 
 AUDIO_SAMPLE_SCHEMA = (
@@ -609,31 +574,18 @@ def decode_audio_samples(binary_df: DataFrame) -> DataFrame:
     codec library, so unlike the pixel/video stand-ins this path decodes
     REAL samples end-to-end. Emits exact integers (n, peak, sum_sq);
     derive RMS JVM-side so the rounding semantics match a SQL oracle's
-    ROUND. Corrupt payloads quarantine as NULL rows."""
-    import numpy as np
+    ROUND. Corrupt payloads, and a data chunk that runs past the
+    payload, quarantine as NULL rows."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    off, size = _wav_data_span(bytes(payload))
-                    v = np.frombuffer(bytes(payload)[off : off + size - size % 2], "<i2")
-                    v64 = v.astype(np.int64)
-                    av = np.abs(v64)
-                    peak = int(av.max()) if len(v) else 0
-                    rows.append(
-                        (doc_id, len(v), peak, int((v64 * v64).sum()),
-                         int((av == peak).sum()) if len(v) else 0)
-                    )
-                except ValueError:
-                    rows.append((doc_id, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_int16", "peak", "sum_sq", "n_at_peak"],
-            )
+    def rows(doc_id, p: bytes) -> list[tuple]:
+        v = _pcm16(p)
+        if not len(v):
+            return [(doc_id, 0, 0, 0, 0)]
+        av = np.abs(v)
+        peak = int(av.max())
+        return [(doc_id, len(v), peak, int((v * v).sum()), int((av == peak).sum()))]
 
-    return binary_df.select("doc_id", "payload").mapInPandas(run, AUDIO_SAMPLE_SCHEMA)
+    return _map_payloads(binary_df, AUDIO_SAMPLE_SCHEMA, rows)
 
 
 PIXEL_STATS_SCHEMA = (
@@ -649,42 +601,21 @@ def decode_bmp_pixels(binary_df: DataFrame) -> DataFrame:
     padding, and fold per-channel (B, G, R) sums in numpy. Emits exact
     integers; derive channel means JVM-side so rounding matches a SQL
     oracle. Corrupt/non-BMP payloads quarantine as NULL rows."""
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(payload)
-                try:
-                    if len(p) < 54 or p[:2] != b"BM":
-                        raise ValueError("not a BMP")
-                    off = int.from_bytes(p[10:14], "little")
-                    w = int.from_bytes(p[18:22], "little", signed=True)
-                    h = int.from_bytes(p[22:26], "little", signed=True)
-                    bits = int.from_bytes(p[28:30], "little")
-                    if bits != 24 or w <= 0 or h <= 0:
-                        raise ValueError("not an uncompressed 24-bit BMP")
-                    stride = w * 3 + (4 - (w * 3) % 4) % 4
-                    data = np.frombuffer(p[off : off + stride * h], np.uint8)
-                    if len(data) < stride * h:
-                        raise ValueError("truncated pixel array")
-                    px = data.reshape(h, stride)[:, : w * 3].reshape(h, w, 3)
-                    s = px.astype(np.int64).sum(axis=(0, 1))
-                    rows.append(
-                        (doc_id, w, h, w * h, int(s[0]), int(s[1]), int(s[2]))
-                    )
-                except ValueError:
-                    rows.append((doc_id, None, None, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_pixels",
-                    "sum_b", "sum_g", "sum_r",
-                ],
-            )
+    def rows(doc_id, p: bytes) -> list[tuple]:
+        px = _bmp_pixels(p)
+        h, w, _ = px.shape
+        s = px.astype(np.int64).sum(axis=(0, 1))
+        return [(doc_id, w, h, w * h, int(s[0]), int(s[1]), int(s[2]))]
 
-    return binary_df.select("doc_id", "payload").mapInPandas(run, PIXEL_STATS_SCHEMA)
+    return _map_payloads(binary_df, PIXEL_STATS_SCHEMA, rows)
+
+
+def _nearest(px: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
+    """Nearest-neighbour sample of a pixel grid: output cell (r, c) reads
+    source row r*h // out_h and column c*w // out_w."""
+    h, w = px.shape[:2]
+    return px[np.ix_((np.arange(out_h) * h) // out_h, (np.arange(out_w) * w) // out_w)]
 
 
 RESIZE_REAL_SCHEMA = "doc_id long, out_w int, out_h int, digest string"
@@ -700,39 +631,13 @@ def resize_bmp_nearest(
     values in (r, c, ch) order) — scalar and hashable, so a SQL oracle
     that reconstructs the same sampled bytes can pin every pixel the
     resize touched. Corrupt payloads quarantine as NULL rows."""
-    import hashlib
 
-    import numpy as np
+    def rows(doc_id, p: bytes) -> list[tuple]:
+        sampled = _nearest(_bmp_pixels(p), out_h, out_w)
+        joined = ",".join(map(str, sampled.reshape(-1).tolist()))
+        return [(doc_id, out_w, out_h, hashlib.md5(joined.encode()).hexdigest())]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(payload)
-                try:
-                    if len(p) < 54 or p[:2] != b"BM":
-                        raise ValueError("not a BMP")
-                    off = int.from_bytes(p[10:14], "little")
-                    w = int.from_bytes(p[18:22], "little", signed=True)
-                    h = int.from_bytes(p[22:26], "little", signed=True)
-                    if int.from_bytes(p[28:30], "little") != 24 or w <= 0 or h <= 0:
-                        raise ValueError("not an uncompressed 24-bit BMP")
-                    stride = w * 3 + (4 - (w * 3) % 4) % 4
-                    data = np.frombuffer(p[off : off + stride * h], np.uint8)
-                    if len(data) < stride * h:
-                        raise ValueError("truncated pixel array")
-                    px = data.reshape(h, stride)[:, : w * 3].reshape(h, w, 3)
-                    ys = (np.arange(out_h) * h) // out_h
-                    xs = (np.arange(out_w) * w) // out_w
-                    sampled = px[np.ix_(ys, xs)]  # (out_h, out_w, 3)
-                    joined = ",".join(str(int(v)) for v in sampled.reshape(-1))
-                    digest = hashlib.md5(joined.encode()).hexdigest()
-                    rows.append((doc_id, out_w, out_h, digest))
-                except ValueError:
-                    rows.append((doc_id, None, None, None))
-            yield pd.DataFrame(rows, columns=["doc_id", "out_w", "out_h", "digest"])
-
-    return binary_df.select("doc_id", "payload").mapInPandas(run, RESIZE_REAL_SCHEMA)
+    return _map_payloads(binary_df, RESIZE_REAL_SCHEMA, rows)
 
 
 def synth_mp4_samples(
@@ -743,12 +648,8 @@ def synth_mp4_samples(
     size (i % 7) + 1; all samples live consecutively in one chunk whose
     stco offset points into the mdat — the exact structures a production
     demuxer walks to find frame boundaries before any codec runs."""
-    if not sample_source:
-        sample_source = b"\x00"
     sizes = [(i % 7) + 1 for i in range(n_samples)]
-    data_size = sum(sizes)
-    reps = data_size // len(sample_source) + 1
-    data = (sample_source * reps)[:data_size]
+    data = _cycle(sample_source, sum(sizes))
 
     stts = _box(
         b"stts",
@@ -771,39 +672,16 @@ def synth_mp4_samples(
     # size — build once with a placeholder to measure, then for real
     for chunk_off in (0, None):
         if chunk_off is None:
-            chunk_off = 24 + len(moov) + 8  # ftyp is fixed 24 bytes
+            chunk_off = len(_FTYP) + len(moov) + 8
         stco = _box(
             b"stco",
             (0).to_bytes(4, "big") + (1).to_bytes(4, "big")
             + chunk_off.to_bytes(4, "big"),
         )
         stbl = _box(b"stbl", stts + stsc + stsz + stco)
-        minf = _box(b"minf", stbl)
-        mdia = _box(b"mdia", minf)
-        trak = _box(b"trak", mdia)
-        mvhd_body = (
-            (0).to_bytes(4, "big") + (0).to_bytes(4, "big")
-            + (0).to_bytes(4, "big") + timescale.to_bytes(4, "big")
-            + duration.to_bytes(4, "big") + (0x00010000).to_bytes(4, "big")
-            + (0x0100).to_bytes(2, "big") + bytes(10)
-            + b"".join(v.to_bytes(4, "big") for v in
-                       (0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000))
-            + bytes(24) + (2).to_bytes(4, "big")
-        )
-        moov = _box(b"moov", _box(b"mvhd", mvhd_body) + trak)
-    ftyp = _box(b"ftyp", b"isom" + (0).to_bytes(4, "big") + b"isomiso2")
-    return ftyp + moov + _box(b"mdat", data)
-
-
-def _walk_children(p: bytes, start: int, end: int):
-    i = start
-    while i + 8 <= end:
-        size = int.from_bytes(p[i : i + 4], "big")
-        kind = p[i + 4 : i + 8]
-        if size < 8 or i + size > end:
-            raise ValueError("corrupt box size")
-        yield kind, i + 8, i + size
-        i += size
+        trak = _box(b"trak", _box(b"mdia", _box(b"minf", stbl)))
+        moov = _box(b"moov", _mvhd(timescale, duration) + trak)
+    return _FTYP + moov + _box(b"mdat", data)
 
 
 def parse_mp4_samples(p: bytes) -> list[tuple[int, int]]:
@@ -858,49 +736,33 @@ def video_frame_index(binary_df: DataFrame, every_k: int = 3) -> DataFrame:
     (md5 over comma-joined byte values). Corrupt payloads quarantine as
     NULL rows. The per-sample bytes would feed a codec at 100 TB; the
     indexing shown here is the distributable, codec-free part."""
-    import hashlib
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(payload)
-                try:
-                    samples = parse_mp4_samples(p)
-                    for i, (off, size) in enumerate(samples):
-                        if i % every_k:
-                            continue
-                        joined = ",".join(str(b) for b in p[off : off + size])
-                        rows.append(
-                            (doc_id, i, size, hashlib.md5(joined.encode()).hexdigest())
-                        )
-                except ValueError:
-                    rows.append((doc_id, None, None, None))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "sample_idx", "size", "digest"]
-            )
+    def rows(doc_id, p: bytes) -> list[tuple]:
+        out = []
+        for i, (off, size) in enumerate(parse_mp4_samples(p)):
+            if i % every_k == 0:
+                joined = ",".join(str(b) for b in p[off : off + size])
+                out.append((doc_id, i, size, hashlib.md5(joined.encode()).hexdigest()))
+        return out
 
-    return binary_df.select("doc_id", "payload").mapInPandas(run, FRAME_INDEX_SCHEMA)
+    return _map_payloads(binary_df, FRAME_INDEX_SCHEMA, rows)
 
 
 def encode_mp4_samples(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Synthesize MP4s WITH sample tables: n % 24 + 1 samples whose data
     cycles the document's text bytes — the ingestion twin of
     :func:`video_frame_index`."""
+    return _encode(
+        docs,
+        text_col,
+        "video/mp4",
+        lambda raw, n: synth_mp4_samples(raw, 600 + (n % 5) * 100, (n * 31) % 100_000, n % 24 + 1),
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                raw = str(text).encode("utf-8")
-                n = len(str(text))
-                mp4 = synth_mp4_samples(
-                    raw, 600 + (n % 5) * 100, (n * 31) % 100_000, n % 24 + 1
-                )
-                rows.append((doc_id, bytearray(mp4), "video/mp4", len(mp4)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload", "mime", "n_bytes"])
 
-    return docs.select("doc_id", text_col).mapInPandas(run, MP4_SCHEMA)
+def _bits_to_long(bits: np.ndarray) -> int:
+    """The flattened boolean array as an integer: element k sets bit k."""
+    return sum(1 << int(k) for k in np.flatnonzero(bits))
 
 
 DHASH_SCHEMA = "doc_id long, dhash long"
@@ -920,45 +782,16 @@ def dhash_bmp(binary_df: DataFrame, rows: int = 7, cols: int = 9) -> DataFrame:
     per image, so the downstream banding join shuffles 8 bytes per image
     regardless of resolution. Corrupt payloads quarantine as NULL.
     """
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(payload)
-                try:
-                    if len(p) < 54 or p[:2] != b"BM":
-                        raise ValueError("not a BMP")
-                    off = int.from_bytes(p[10:14], "little")
-                    w = int.from_bytes(p[18:22], "little", signed=True)
-                    h = int.from_bytes(p[22:26], "little", signed=True)
-                    if int.from_bytes(p[28:30], "little") != 24 or w <= 0 or h <= 0:
-                        raise ValueError("not an uncompressed 24-bit BMP")
-                    stride = w * 3 + (4 - (w * 3) % 4) % 4
-                    data = np.frombuffer(p[off : off + stride * h], np.uint8)
-                    if len(data) < stride * h:
-                        raise ValueError("truncated pixel array")
-                    px = data.reshape(h, stride)[:, : w * 3].reshape(h, w, 3)
-                    # positive-height BMPs store scanlines bottom-up; flip
-                    # so thumbnail row 0 is the IMAGE's top row and the
-                    # hash matches a standard dHash fed the same image
-                    px = px[::-1]
-                    ys = (np.arange(rows) * h) // rows
-                    xs = (np.arange(cols) * w) // cols
-                    gray = px[np.ix_(ys, xs)].astype(np.int64).sum(axis=2) // 3
-                    bits = gray[:, 1:] > gray[:, :-1]  # (rows, cols-1)
-                    val = 0
-                    for r in range(rows):
-                        for c in range(cols - 1):
-                            if bits[r, c]:
-                                val |= 1 << (r * (cols - 1) + c)
-                    out.append((doc_id, val))
-                except ValueError:
-                    out.append((doc_id, None))
-            yield pd.DataFrame(out, columns=["doc_id", "dhash"])
+    def hash_rows(doc_id, p: bytes) -> list[tuple]:
+        # positive-height BMPs store scanlines bottom-up; flip so
+        # thumbnail row 0 is the IMAGE's top row and the hash matches a
+        # standard dHash fed the same image
+        px = _bmp_pixels(p)[::-1]
+        gray = _nearest(px, rows, cols).astype(np.int64).sum(axis=2) // 3
+        return [(doc_id, _bits_to_long(gray[:, 1:] > gray[:, :-1]))]
 
-    return binary_df.select("doc_id", "payload").mapInPandas(run, DHASH_SCHEMA)
+    return _map_payloads(binary_df, DHASH_SCHEMA, hash_rows)
 
 
 def dhash_near_pairs(
@@ -989,15 +822,8 @@ def synth_png(
     IEND — correct CRCs throughout, decodable by any viewer. Pixel bytes
     cycle ``pixel_source`` in scanline order; ``filter_type`` 0 (None)
     or 1 (Sub) exercises the decoder's unfilter path."""
-    import struct
-    import zlib
-
-    if not pixel_source:
-        pixel_source = b"\x00"
     row_bytes = width * 3
-    need = row_bytes * height
-    reps = need // len(pixel_source) + 1
-    raw = (pixel_source * reps)[:need]
+    raw = _cycle(pixel_source, row_bytes * height)
     lines = []
     for r in range(height):
         line = bytearray(raw[r * row_bytes : (r + 1) * row_bytes])
@@ -1029,8 +855,6 @@ def _png_unfilter(raw: bytes, width: int, height: int):
 
     Returns an (h, w, 3) uint8 array. Pure numpy + the spec's Paeth
     predictor — no imaging library."""
-    import numpy as np
-
     row_bytes = width * 3
     out = np.zeros((height, row_bytes), dtype=np.uint8)
     pos = 0
@@ -1075,76 +899,64 @@ def decode_png_pixels(binary_df: DataFrame) -> DataFrame:
     exercised — with no imaging dependency. Corrupt payloads quarantine
     as NULL rows. Emits the same stats schema as decode_bmp_pixels
     (channel order documented per format)."""
-    import struct
-    import zlib
 
-    import numpy as np
+    def rows(doc_id, p: bytes) -> list[tuple]:
+        if p[:8] != b"\x89PNG\r\n\x1a\n":
+            raise ValueError("not a PNG")
+        pos, w, h, idat = 8, None, None, b""
+        while pos + 8 <= len(p):
+            (ln,) = struct.unpack(">I", p[pos : pos + 4])
+            kind = p[pos + 4 : pos + 8]
+            body = p[pos + 8 : pos + 8 + ln]
+            crc = struct.unpack(">I", p[pos + 8 + ln : pos + 12 + ln])[0]
+            if zlib.crc32(kind + body) & 0xFFFFFFFF != crc:
+                raise ValueError("bad chunk CRC")
+            if kind == b"IHDR":
+                w, h, depth, ctype = struct.unpack(">IIBB", body[:10])
+                if depth != 8 or ctype != 2:
+                    raise ValueError("not 8-bit RGB")
+            elif kind == b"IDAT":
+                idat += body
+            elif kind == b"IEND":
+                break
+            pos += 12 + ln
+        if w is None or not idat:
+            raise ValueError("missing IHDR/IDAT")
+        raw = zlib.decompress(idat)
+        if len(raw) != h * (w * 3 + 1):
+            raise ValueError("bad inflated length")
+        s = _png_unfilter(raw, w, h).astype(np.int64).sum(axis=(0, 1))
+        # PNG stores R,G,B — map into the shared stats schema's
+        # (sum_b, sum_g, sum_r) slots by channel NAME
+        return [(doc_id, w, h, w * h, int(s[2]), int(s[1]), int(s[0]))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(payload)
-                try:
-                    if p[:8] != b"\x89PNG\r\n\x1a\n":
-                        raise ValueError("not a PNG")
-                    pos, w, h, idat = 8, None, None, b""
-                    while pos + 8 <= len(p):
-                        (ln,) = struct.unpack(">I", p[pos : pos + 4])
-                        kind = p[pos + 4 : pos + 8]
-                        body = p[pos + 8 : pos + 8 + ln]
-                        crc = struct.unpack(">I", p[pos + 8 + ln : pos + 12 + ln])[0]
-                        if zlib.crc32(kind + body) & 0xFFFFFFFF != crc:
-                            raise ValueError("bad chunk CRC")
-                        if kind == b"IHDR":
-                            w, h, depth, ctype = struct.unpack(">IIBB", body[:10])
-                            if depth != 8 or ctype != 2:
-                                raise ValueError("not 8-bit RGB")
-                        elif kind == b"IDAT":
-                            idat += body
-                        elif kind == b"IEND":
-                            break
-                        pos += 12 + ln
-                    if w is None or not idat:
-                        raise ValueError("missing IHDR/IDAT")
-                    raw = zlib.decompress(idat)
-                    if len(raw) != h * (w * 3 + 1):
-                        raise ValueError("bad inflated length")
-                    px = _png_unfilter(raw, w, h)
-                    s = px.astype(np.int64).sum(axis=(0, 1))
-                    # PNG stores R,G,B — map into the shared stats schema's
-                    # (sum_b, sum_g, sum_r) slots by channel NAME
-                    rows.append(
-                        (doc_id, w, h, w * h, int(s[2]), int(s[1]), int(s[0]))
-                    )
-                except (ValueError, zlib.error, struct.error):
-                    rows.append((doc_id, None, None, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_pixels",
-                    "sum_b", "sum_g", "sum_r",
-                ],
-            )
-
-    return binary_df.select("doc_id", "payload").mapInPandas(run, PIXEL_STATS_SCHEMA)
+    return _map_payloads(binary_df, PIXEL_STATS_SCHEMA, rows)
 
 
 def encode_png(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Synthesize a REAL PNG column: each document's text becomes the
     pixel bytes of a valid zlib-compressed 8-bit RGB PNG (width/height
     derived from n_chars like encode_bmp)."""
+    return _encode(
+        docs, text_col, "image/png", lambda raw, n: synth_png(raw, n % 48 + 1, n % 32 + 1)
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                raw = str(text).encode("utf-8")
-                png = synth_png(raw, len(str(text)) % 48 + 1, len(str(text)) % 32 + 1)
-                rows.append((doc_id, bytearray(png), "image/png", len(png)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload", "mime", "n_bytes"])
 
-    return docs.select("doc_id", text_col).mapInPandas(run, BMP_SCHEMA)
+def _digest_jumps(binary_df: DataFrame) -> tuple[DataFrame, Window]:
+    """Every sample of every valid video with ``dist``, the Hamming
+    distance of its 60-bit digest prefix to the previous sample's (NULL
+    for the first), plus the per-document sample-order window it used.
+    Corrupt payloads (NULL sample rows) are quarantined before the
+    window."""
+    idx = video_frame_index(binary_df, every_k=1).filter(
+        F.col("sample_idx").isNotNull()
+    )
+    sig = F.conv(F.substring("digest", 1, 15), 16, 10).cast("long")
+    w = Window.partitionBy("doc_id").orderBy("sample_idx")
+    jumps = idx.withColumn("sig", sig).withColumn(
+        "dist", F.bit_count(F.col("sig").bitwiseXOR(F.lag("sig").over(w)))
+    )
+    return jumps, w
 
 
 def video_scene_cuts(binary_df: DataFrame, threshold: int = 32) -> DataFrame:
@@ -1165,18 +977,7 @@ def video_scene_cuts(binary_df: DataFrame, threshold: int = 32) -> DataFrame:
 
     Emits (doc_id, n_samples, n_cuts, max_jump).
     """
-    idx = video_frame_index(binary_df, every_k=1).filter(
-        F.col("sample_idx").isNotNull()
-    )
-    sig = F.conv(F.substring("digest", 1, 15), 16, 10).cast("long")
-    w = Window.partitionBy("doc_id").orderBy("sample_idx")
-    jumps = (
-        idx.withColumn("sig", sig)
-        .withColumn(
-            "dist",
-            F.bit_count(F.col("sig").bitwiseXOR(F.lag("sig").over(w))),
-        )
-    )
+    jumps, _ = _digest_jumps(binary_df)
     return jumps.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_samples"),
         F.sum(
@@ -1200,23 +1001,12 @@ def video_keyframes(binary_df: DataFrame, threshold: int = 32) -> DataFrame:
     one keyed window per document (cumulative cut count), then a
     (doc, scene) groupBy — frames of one video never shuffle apart.
     """
-    idx = video_frame_index(binary_df, every_k=1).filter(
-        F.col("sample_idx").isNotNull()
-    )
-    sig = F.conv(F.substring("digest", 1, 15), 16, 10).cast("long")
-    w = Window.partitionBy("doc_id").orderBy("sample_idx")
-    jumps = (
-        idx.withColumn("sig", sig)
-        .withColumn(
-            "dist",
-            F.bit_count(F.col("sig").bitwiseXOR(F.lag("sig").over(w))),
-        )
-        .withColumn(
-            "scene_id",
-            F.sum(
-                F.when(F.col("dist") >= threshold, 1).otherwise(0)
-            ).over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        )
+    jumps, w = _digest_jumps(binary_df)
+    jumps = jumps.withColumn(
+        "scene_id",
+        F.sum(
+            F.when(F.col("dist") >= threshold, 1).otherwise(0)
+        ).over(w.rowsBetween(Window.unboundedPreceding, 0)),
     )
     sw = Window.partitionBy("doc_id", "scene_id").orderBy("sample_idx")
     flagged = jumps.withColumn("rn_in_scene", F.row_number().over(sw))
@@ -1234,6 +1024,12 @@ def video_keyframes(binary_df: DataFrame, threshold: int = 32) -> DataFrame:
     )
 
 
+def _frame_energies(v: np.ndarray, n: int) -> list[int]:
+    """Exact int64 sum of squares of each ``n``-sample frame of ``v``;
+    the last frame may be partial."""
+    return np.add.reduceat(v * v, np.arange(0, len(v), n)).tolist() if len(v) else []
+
+
 ENERGY_SHINGLE_SCHEMA = "doc_id long, g string"
 
 
@@ -1244,35 +1040,20 @@ def audio_energy_shingles(binary_df: DataFrame, window: int = 64) -> DataFrame:
     int64 energy (sum of squares) quantizes to its TOP-6-BIT bucket
     ((energy+1) >> (bit_length-6) — a ~1.5%-tolerance loudness level in
     pure integer arithmetic any engine reproduces), and the shingle is
-    "window_idx:bucket". Feed the set into prefix_jaccard_pairs for
-    exact audio near-dup detection; only (long, short-string) rows leave
-    the Arrow decode — PCM bytes never shuffle. Corrupt payloads drop.
+    "window_idx:bit_length:bucket" with bit_length that of energy+1.
+    Feed the set into prefix_jaccard_pairs for exact audio near-dup
+    detection; only (long, short-string) rows leave the Arrow decode —
+    PCM bytes never shuffle. Corrupt payloads drop.
     """
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_g = [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    off, size = _wav_data_span(bytes(payload))
-                except ValueError:
-                    continue
-                v = np.frombuffer(
-                    bytes(payload)[off : off + size - size % 2], "<i2"
-                ).astype(np.int64)
-                for widx in range(0, (len(v) + window - 1) // window):
-                    chunk = v[widx * window : (widx + 1) * window]
-                    energy = int((chunk * chunk).sum())
-                    out_ids.append(doc_id)
-                    b = (energy + 1).bit_length()
-                    bucket = (energy + 1) >> max(b - 6, 0)
-                    out_g.append(f"{widx}:{b}:{bucket}")
-            yield pd.DataFrame({"doc_id": out_ids, "g": out_g})
+    def rows(doc_id, p: bytes) -> list[tuple]:
+        out = []
+        for widx, energy in enumerate(_frame_energies(_pcm16(p), window)):
+            b = (energy + 1).bit_length()
+            out.append((doc_id, f"{widx}:{b}:{(energy + 1) >> max(b - 6, 0)}"))
+        return out
 
-    return binary_df.select("doc_id", "payload").mapInPandas(
-        run, ENERGY_SHINGLE_SCHEMA
-    )
+    return _map_payloads(binary_df, ENERGY_SHINGLE_SCHEMA, rows, drop_corrupt=True)
 
 
 AUDIO_FRAME_SCHEMA = "doc_id long, frame_idx long, n int, sum_sq long"
@@ -1289,35 +1070,15 @@ def decode_audio_frame_energy(
     mapInPandas with numpy int64 arithmetic, same decode core as
     :func:`decode_audio_samples`; corrupt payloads contribute no frames
     (quarantine-by-absence, the 100 TB rule)."""
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
-            fidx: list = []
-            ns: list = []
-            ss: list = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    off, size = _wav_data_span(bytes(payload))
-                except ValueError:
-                    continue
-                v = np.frombuffer(
-                    bytes(payload)[off : off + size - size % 2], "<i2"
-                ).astype(np.int64)
-                for f in range((len(v) + frame_len - 1) // frame_len):
-                    seg = v[f * frame_len : (f + 1) * frame_len]
-                    ids.append(doc_id)
-                    fidx.append(f)
-                    ns.append(len(seg))
-                    ss.append(int((seg * seg).sum()))
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": fidx, "n": ns, "sum_sq": ss}
-            )
+    def rows(doc_id, p: bytes) -> list[tuple]:
+        v = _pcm16(p)
+        return [
+            (doc_id, f, min(frame_len, len(v) - f * frame_len), energy)
+            for f, energy in enumerate(_frame_energies(v, frame_len))
+        ]
 
-    return binary_df.select("doc_id", "payload").mapInPandas(
-        run, AUDIO_FRAME_SCHEMA
-    )
+    return _map_payloads(binary_df, AUDIO_FRAME_SCHEMA, rows, drop_corrupt=True)
 
 
 BYTE_HIST_SCHEMA = "doc_id long, val int, c long"
@@ -1329,41 +1090,13 @@ def decode_bmp_byte_histogram(binary_df: DataFrame) -> DataFrame:
     (doc_id, val, c) for every byte value present — the substrate for
     entropy/uniformity image-quality signals. numpy bincount per
     payload, Arrow-batched; corrupt payloads contribute no rows."""
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
-            vals: list = []
-            cs: list = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(payload)
-                try:
-                    if len(p) < 54 or p[:2] != b"BM":
-                        raise ValueError("not a BMP")
-                    off = int.from_bytes(p[10:14], "little")
-                    w = int.from_bytes(p[18:22], "little", signed=True)
-                    h = int.from_bytes(p[22:26], "little", signed=True)
-                    bits = int.from_bytes(p[28:30], "little")
-                    if bits != 24 or w <= 0 or h <= 0:
-                        raise ValueError("not an uncompressed 24-bit BMP")
-                    stride = w * 3 + (4 - (w * 3) % 4) % 4
-                    data = np.frombuffer(p[off : off + stride * h], np.uint8)
-                    if len(data) < stride * h:
-                        raise ValueError("truncated pixel array")
-                except ValueError:
-                    continue
-                flat = data.reshape(h, stride)[:, : w * 3].ravel()
-                cnt = np.bincount(flat, minlength=256)
-                nz = np.nonzero(cnt)[0]
-                ids.extend([doc_id] * len(nz))
-                vals.extend(int(x) for x in nz)
-                cs.extend(int(cnt[x]) for x in nz)
-            yield pd.DataFrame({"doc_id": ids, "val": vals, "c": cs})
+    def rows(doc_id, p: bytes) -> list[tuple]:
+        cnt = np.bincount(_bmp_pixels(p).reshape(-1), minlength=256)
+        nz = np.flatnonzero(cnt)
+        return list(zip([doc_id] * len(nz), nz.tolist(), cnt[nz].tolist()))
 
-    return binary_df.select("doc_id", "payload").mapInPandas(
-        run, BYTE_HIST_SCHEMA
-    )
+    return _map_payloads(binary_df, BYTE_HIST_SCHEMA, rows, drop_corrupt=True)
 
 
 LAPLACIAN_SCHEMA = (
@@ -1384,58 +1117,23 @@ def bmp_laplacian_stats(binary_df: DataFrame) -> DataFrame:
     oracle. Images with no interior (w or h < 3) emit n_interior = 0.
     Bounds: |lap| <= 4*765, so sum_lap2 <= n * 9.4e6 — int64-safe for
     any image under ~10^12 pixels. Corrupt payloads quarantine as NULLs."""
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(payload)
-                try:
-                    if len(p) < 54 or p[:2] != b"BM":
-                        raise ValueError("not a BMP")
-                    off = int.from_bytes(p[10:14], "little")
-                    w = int.from_bytes(p[18:22], "little", signed=True)
-                    h = int.from_bytes(p[22:26], "little", signed=True)
-                    bits = int.from_bytes(p[28:30], "little")
-                    if bits != 24 or w <= 0 or h <= 0:
-                        raise ValueError("not an uncompressed 24-bit BMP")
-                    stride = w * 3 + (4 - (w * 3) % 4) % 4
-                    data = np.frombuffer(p[off : off + stride * h], np.uint8)
-                    if len(data) < stride * h:
-                        raise ValueError("truncated pixel array")
-                except ValueError:
-                    rows.append((doc_id, None, None, None, None, None))
-                    continue
-                px = data.reshape(h, stride)[:, : w * 3].reshape(h, w, 3)
-                g = px.astype(np.int64).sum(axis=2)
-                if h < 3 or w < 3:
-                    rows.append((doc_id, w, h, 0, 0, 0))
-                    continue
-                lap = (
-                    4 * g[1:-1, 1:-1]
-                    - g[:-2, 1:-1]
-                    - g[2:, 1:-1]
-                    - g[1:-1, :-2]
-                    - g[1:-1, 2:]
-                )
-                rows.append(
-                    (
-                        doc_id, w, h, int(lap.size),
-                        int(lap.sum()), int((lap * lap).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_interior",
-                    "sum_lap", "sum_lap2",
-                ],
-            )
+    def rows(doc_id, p: bytes) -> list[tuple]:
+        px = _bmp_pixels(p)
+        h, w, _ = px.shape
+        if h < 3 or w < 3:
+            return [(doc_id, w, h, 0, 0, 0)]
+        g = px.astype(np.int64).sum(axis=2)
+        lap = (
+            4 * g[1:-1, 1:-1]
+            - g[:-2, 1:-1]
+            - g[2:, 1:-1]
+            - g[1:-1, :-2]
+            - g[1:-1, 2:]
+        )
+        return [(doc_id, w, h, int(lap.size), int(lap.sum()), int((lap * lap).sum()))]
 
-    return binary_df.select("doc_id", "payload").mapInPandas(
-        run, LAPLACIAN_SCHEMA
-    )
+    return _map_payloads(binary_df, LAPLACIAN_SCHEMA, rows)
 
 
 #: Q15 fixed-point DFT tables for the probe-tone detector: 64-sample
@@ -1449,8 +1147,6 @@ TONE_BINS = (1, 2, 3, 5)
 
 
 def _tone_table() -> list[tuple[int, int, int, int]]:
-    import math
-
     return [
         (
             k,
@@ -1463,6 +1159,25 @@ def _tone_table() -> list[tuple[int, int, int, int]]:
     ]
 
 
+#: the cos_q15 and -sin_q15 columns of _tone_table, one row per probe bin
+_TONE_C, _TONE_S = (
+    np.array(_tone_table(), np.int64)[:, 2:].T.reshape(2, len(TONE_BINS), TONE_FRAME)
+)
+
+
+def _q15_powers(v: np.ndarray) -> np.ndarray:
+    """(n_frames, len(TONE_BINS)) probe-bin DFT power of each complete
+    TONE_FRAME-sample frame of ``v``, in exact int64: re = sum(x *
+    cos_q15), im = sum(x * -sin_q15) (|x| <= 2^15, twiddle <= 2^15, 64
+    terms -> |re| <= 2^36), each quantized by an arithmetic >> 15
+    (floor), power = re_q^2 + im_q^2 (<= 2^43)."""
+    nf = len(v) // TONE_FRAME
+    frames = v[: nf * TONE_FRAME].reshape(nf, TONE_FRAME)
+    req = (frames @ _TONE_C.T) >> 15  # arithmetic shift = floor
+    imq = (frames @ _TONE_S.T) >> 15
+    return req * req + imq * imq
+
+
 TONE_SCHEMA = "doc_id long, n_frames long, bin int, power long"
 
 
@@ -1470,48 +1185,18 @@ def audio_tone_power_q15(binary_df: DataFrame) -> DataFrame:
     """Per-payload probe-frequency DFT power over REAL decoded PCM in
     Q15 fixed point — the tone/hum detector audio curation runs to flag
     test signals, dial tones and mains hum before transcription spend.
-    Per complete 64-sample frame and probe bin k: re = sum(x * cos_q15),
-    im = sum(x * -sin_q15) (exact int64: |x| <= 2^15, twiddle <= 2^15,
-    64 terms -> |re| <= 2^36), quantized by an arithmetic >> 15 (floor),
-    then power = re_q^2 + im_q^2 summed over frames (<= 2^43 per frame
-    — int64-safe to ~2 million frames). Emits one row per (payload,
-    bin); payloads with fewer than 64 samples emit nothing (no complete
-    frame). Corrupt payloads quarantine silently."""
-    import numpy as np
+    Per complete 64-sample frame and probe bin k the :func:`_q15_powers`
+    power, summed over frames (int64-safe to ~2 million frames). Emits
+    one row per (payload, bin); payloads with fewer than 64 samples emit
+    nothing (no complete frame). Corrupt payloads quarantine silently."""
 
-    tbl = _tone_table()
-    C = np.array(
-        [[c for (k, n, c, s) in tbl if k == kk] for kk in TONE_BINS], np.int64
-    )
-    S = np.array(
-        [[s for (k, n, c, s) in tbl if k == kk] for kk in TONE_BINS], np.int64
-    )
+    def rows(doc_id, p: bytes) -> list[tuple]:
+        pw = _q15_powers(_pcm16(p))
+        if not len(pw):
+            return []
+        return [(doc_id, len(pw), kk, q) for kk, q in zip(TONE_BINS, pw.sum(axis=0).tolist())]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    off, size = _wav_data_span(bytes(payload))
-                except ValueError:
-                    continue
-                v = np.frombuffer(
-                    bytes(payload)[off : off + size - size % 2], "<i2"
-                ).astype(np.int64)
-                nf = len(v) // TONE_FRAME
-                if nf == 0:
-                    continue
-                frames = v[: nf * TONE_FRAME].reshape(nf, TONE_FRAME)
-                req = (frames @ C.T) >> 15  # arithmetic shift = floor
-                imq = (frames @ S.T) >> 15
-                pw = (req * req + imq * imq).sum(axis=0)
-                for kk, p in zip(TONE_BINS, pw):
-                    rows.append((doc_id, nf, kk, int(p)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_frames", "bin", "power"]
-            )
-
-    return binary_df.select("doc_id", "payload").mapInPandas(run, TONE_SCHEMA)
+    return _map_payloads(binary_df, TONE_SCHEMA, rows, drop_corrupt=True)
 
 
 PEAK_SCHEMA = "doc_id long, fi long, peak_bin int, peak_power long"
@@ -1526,44 +1211,13 @@ def audio_frame_peaks_q15(binary_df: DataFrame) -> DataFrame:
     argmax per frame packed as power*8 + (7-bin) so ties break to the
     LOWEST bin on any engine. Zero-shuffle: one Arrow-batched pass,
     emitting nf rows per payload."""
-    import numpy as np
-
-    tbl = _tone_table()
-    C = np.array(
-        [[c for (k, n, c, s) in tbl if k == kk] for kk in TONE_BINS], np.int64
-    )
-    S = np.array(
-        [[s for (k, n, c, s) in tbl if k == kk] for kk in TONE_BINS], np.int64
-    )
     binval = np.array([7 - kk for kk in TONE_BINS], np.int64)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    off, size = _wav_data_span(bytes(payload))
-                except ValueError:
-                    continue
-                v = np.frombuffer(
-                    bytes(payload)[off : off + size - size % 2], "<i2"
-                ).astype(np.int64)
-                nf = len(v) // TONE_FRAME
-                if nf == 0:
-                    continue
-                frames = v[: nf * TONE_FRAME].reshape(nf, TONE_FRAME)
-                req = (frames @ C.T) >> 15
-                imq = (frames @ S.T) >> 15
-                pw = req * req + imq * imq  # (nf, n_bins)
-                enc = (pw * 8 + binval[None, :]).max(axis=1)
-                for fi in range(nf):
-                    e = int(enc[fi])
-                    rows.append((doc_id, fi, 7 - e % 8, e // 8))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "fi", "peak_bin", "peak_power"]
-            )
+    def rows(doc_id, p: bytes) -> list[tuple]:
+        enc = (_q15_powers(_pcm16(p)) * 8 + binval).max(axis=1).tolist()
+        return [(doc_id, fi, 7 - e % 8, e // 8) for fi, e in enumerate(enc)]
 
-    return binary_df.select("doc_id", "payload").mapInPandas(run, PEAK_SCHEMA)
+    return _map_payloads(binary_df, PEAK_SCHEMA, rows, drop_corrupt=True)
 
 
 def audio_landmarks(peaks: DataFrame) -> DataFrame:
@@ -1655,8 +1309,6 @@ def _dct8_table() -> list[tuple[int, int, int]]:
     """(u, x, q15) DCT-II basis literals: round(cos(pi*(2x+1)*u/16) *
     32768) — shared verbatim between the numpy kernel and the SQL
     oracle, the same fixed-point-literal convention as _tone_table."""
-    import math
-
     return [
         (u, x, round(math.cos(math.pi * (2 * x + 1) * u / 16) * 32768))
         for u in range(8)
@@ -1689,57 +1341,21 @@ def phash_dct_bmp(binary_df: DataFrame) -> DataFrame:
     downstream banding joins shuffle 8 bytes per image at any
     resolution. Corrupt payloads quarantine as NULL.
     """
-    import numpy as np
+    T = np.array([q for _, _, q in _dct8_table()], np.int64).reshape(8, 8)
 
-    tbl = _dct8_table()
-    T = np.zeros((8, 8), np.int64)
-    for u, x, q in tbl:
-        T[u, x] = q
+    def rows(doc_id, p: bytes) -> list[tuple]:
+        px = _bmp_pixels(p)[::-1]  # bottom-up scanlines -> image order
+        h, w, _ = px.shape
+        gray = px.astype(np.int64).sum(axis=2) // 3
+        cell = (((np.arange(h) * 8) // h)[:, None], ((np.arange(w) * 8) // w)[None, :])
+        sums = np.zeros((8, 8), np.int64)
+        cnts = np.zeros((8, 8), np.int64)
+        np.add.at(sums, cell, gray)
+        np.add.at(cnts, cell, 1)
+        # empty cells have sum 0, so they stay 0
+        C = T @ (sums // np.maximum(cnts, 1)) @ T.T  # exact int64
+        ac = np.delete(C.reshape(-1), 0)  # drop DC
+        bits = ac > np.sort(ac)[31]  # lower median of 63
+        return [(doc_id, _bits_to_long(bits), int(bits.sum()))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(payload)
-                try:
-                    if len(p) < 54 or p[:2] != b"BM":
-                        raise ValueError("not a BMP")
-                    off = int.from_bytes(p[10:14], "little")
-                    w = int.from_bytes(p[18:22], "little", signed=True)
-                    h = int.from_bytes(p[22:26], "little", signed=True)
-                    if int.from_bytes(p[28:30], "little") != 24 or w <= 0 or h <= 0:
-                        raise ValueError("not an uncompressed 24-bit BMP")
-                    stride = w * 3 + (4 - (w * 3) % 4) % 4
-                    data = np.frombuffer(p[off : off + stride * h], np.uint8)
-                    if len(data) < stride * h:
-                        raise ValueError("truncated pixel array")
-                    px = data.reshape(h, stride)[:, : w * 3].reshape(h, w, 3)
-                    px = px[::-1]  # bottom-up scanlines -> image order
-                    gray = px.astype(np.int64).sum(axis=2) // 3
-                    ys = (np.arange(h) * 8) // h
-                    xs = (np.arange(w) * 8) // w
-                    cells = np.zeros((8, 8), np.int64)
-                    sums = np.zeros((8, 8), np.int64)
-                    cnts = np.zeros((8, 8), np.int64)
-                    np.add.at(sums, (ys[:, None], xs[None, :]), gray)
-                    np.add.at(
-                        cnts,
-                        (ys[:, None], xs[None, :]),
-                        np.ones_like(gray),
-                    )
-                    nz = cnts > 0
-                    cells[nz] = sums[nz] // cnts[nz]
-                    C = T @ cells @ T.T  # exact int64
-                    ac = np.delete(C.reshape(-1), 0)  # drop DC
-                    med = np.sort(ac)[31]  # lower median of 63
-                    bits = ac > med
-                    val = 0
-                    for k in range(63):
-                        if bits[k]:
-                            val |= 1 << k
-                    out.append((doc_id, val, int(bits.sum())))
-                except ValueError:
-                    out.append((doc_id, None, None))
-            yield pd.DataFrame(out, columns=["doc_id", "phash", "n_above"])
-
-    return binary_df.select("doc_id", "payload").mapInPandas(run, PHASH_SCHEMA)
+    return _map_payloads(binary_df, PHASH_SCHEMA, rows)

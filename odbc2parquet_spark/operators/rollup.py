@@ -328,6 +328,39 @@ def rolling_trend(
     )
 
 
+def _daily_series(
+    daily: DataFrame, group_col: str, day_col: str, value_col: str
+) -> DataFrame:
+    """(group, series): each group's (d, x) structs in day order — the
+    input every Holt fold below reads."""
+    return daily.groupBy(group_col).agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct(F.col(day_col).alias("d"), F.col(value_col).alias("x"))
+            )
+        ).alias("series")
+    )
+
+
+def _fit(
+    arr: DataFrame, group_col: str, zero: F.Column, step
+) -> tuple[DataFrame, list[F.Column]]:
+    """Fold each group's series with ``step`` from ``zero``: the frame
+    (group, n_days, st) and its first output columns (group, n_days, and
+    level and trend rounded to 6)."""
+    fitted = arr.select(
+        group_col,
+        F.size("series").alias("n_days"),
+        F.aggregate(F.col("series"), zero, step).alias("st"),
+    )
+    return fitted, [
+        F.col(group_col),
+        F.col("n_days").cast("long").alias("n_days"),
+        F.round(F.col("st.l"), 6).alias("level"),
+        F.round(F.col("st.b"), 6).alias("trend"),
+    ]
+
+
 def holt_forecast(
     daily: DataFrame,
     group_col: str = "key",
@@ -354,11 +387,7 @@ def holt_forecast(
     loop; groups parallelize across tasks. Emits (group, n_days, level,
     trend, f_<h>...) rounded to 6.
     """
-    arr = daily.groupBy(group_col).agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col(day_col).alias("d"), F.col(value_col).alias("x")))
-        ).alias("series")
-    )
+    arr = _daily_series(daily, group_col, day_col, value_col)
     zero = F.struct(
         F.lit(None).cast("double").alias("l"),
         F.lit(0.0).alias("b"),
@@ -374,17 +403,7 @@ def holt_forecast(
         )
         return F.struct(l_new.alias("l"), b_new.alias("b"))
 
-    fitted = arr.select(
-        group_col,
-        F.size("series").alias("n_days"),
-        F.aggregate(F.col("series"), zero, step).alias("st"),
-    )
-    cols = [
-        F.col(group_col),
-        F.col("n_days").cast("long").alias("n_days"),
-        F.round(F.col("st.l"), 6).alias("level"),
-        F.round(F.col("st.b"), 6).alias("trend"),
-    ]
+    fitted, cols = _fit(arr, group_col, zero, step)
     for h in horizons:
         cols.append(
             F.round(F.col("st.l") + F.lit(float(h)) * F.col("st.b"), 6).alias(f"f{h}")
@@ -392,42 +411,11 @@ def holt_forecast(
     return fitted.select(*cols)
 
 
-def holt_winters_forecast(
-    daily: DataFrame,
-    group_col: str = "key",
-    day_col: str = "day",
-    value_col: str = "x",
-    period: int = 7,
-    horizons: tuple[int, ...] = (1, 7),
-) -> DataFrame:
-    """Holt-Winters ADDITIVE seasonal smoothing with alpha = beta =
-    gamma = 1/2 — :func:`holt_forecast`'s two-state dyadic recursion
-    extended with a ``period``-slot seasonal state, completing the
-    classical smoothing ladder (EWMA -> Holt -> Holt-Winters):
-
-        idx_t   = (t - 1) mod period
-        level_t = ((x_t - s_idx) + (level + trend)) / 2
-        trend_t = ((level_t - level_{t-1}) + trend_{t-1}) / 2
-        s_idx'  = ((x_t - level_t) + s_idx) / 2
-
-    Every operation is an add/subtract or an EXACT IEEE halving in a
-    fixed left-to-right order, so any engine replays the fold
-    bit-identically; seeds are level = x_1, trend = 0, seasonal all 0
-    (the first pass through each slot then learns half the residual).
-    Forecast f_h = level + h*trend + s[(n-1+h) mod period].
-
-    Same scale shape as holt_forecast: each group's calendar-sized daily
-    series folds inside ONE Catalyst ``aggregate`` expression (the
-    seasonal array rides in the accumulator struct) — no per-step
-    shuffle, no driver loop; groups parallelize across tasks.
-    """
-    arr = daily.groupBy(group_col).agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(F.col(day_col).alias("d"), F.col(value_col).alias("x"))
-            )
-        ).alias("series")
-    )
+def _hw_fold(period: int):
+    """(zero, step) of the additive Holt-Winters fold with alpha = beta =
+    gamma = 1/2 (the recursion :func:`holt_winters_forecast` documents):
+    accumulator (l, b, s, t) = level, trend, ``period`` seasonal slots and
+    the count of folded days."""
     zero = F.struct(
         F.lit(None).cast("double").alias("l"),
         F.lit(0.0).alias("b"),
@@ -459,17 +447,41 @@ def holt_winters_forecast(
             (t + 1).alias("t"),
         )
 
-    fitted = arr.select(
-        group_col,
-        F.size("series").alias("n_days"),
-        F.aggregate(F.col("series"), zero, step).alias("st"),
-    )
-    cols = [
-        F.col(group_col),
-        F.col("n_days").cast("long").alias("n_days"),
-        F.round(F.col("st.l"), 6).alias("level"),
-        F.round(F.col("st.b"), 6).alias("trend"),
-    ]
+    return zero, step
+
+
+def holt_winters_forecast(
+    daily: DataFrame,
+    group_col: str = "key",
+    day_col: str = "day",
+    value_col: str = "x",
+    period: int = 7,
+    horizons: tuple[int, ...] = (1, 7),
+) -> DataFrame:
+    """Holt-Winters ADDITIVE seasonal smoothing with alpha = beta =
+    gamma = 1/2 — :func:`holt_forecast`'s two-state dyadic recursion
+    extended with a ``period``-slot seasonal state, completing the
+    classical smoothing ladder (EWMA -> Holt -> Holt-Winters):
+
+        idx_t   = (t - 1) mod period
+        level_t = ((x_t - s_idx) + (level + trend)) / 2
+        trend_t = ((level_t - level_{t-1}) + trend_{t-1}) / 2
+        s_idx'  = ((x_t - level_t) + s_idx) / 2
+
+    Every operation is an add/subtract or an EXACT IEEE halving in a
+    fixed left-to-right order, so any engine replays the fold
+    bit-identically; seeds are level = x_1, trend = 0, seasonal all 0
+    (the first pass through each slot then learns half the residual).
+    Forecast f_h = level + h*trend + s[(n-1+h) mod period].
+
+    Same scale shape as holt_forecast: each group's calendar-sized daily
+    series folds inside ONE Catalyst ``aggregate`` expression (the
+    seasonal array rides in the accumulator struct) — no per-step
+    shuffle, no driver loop; groups parallelize across tasks.
+    """
+    arr = _daily_series(daily, group_col, day_col, value_col)
+    zero, step = _hw_fold(period)
+    fitted, cols = _fit(arr, group_col, zero, step)
     for h in horizons:
         slot = (F.col("n_days") - 1 + h) % period
         cols.append(
@@ -507,43 +519,8 @@ def hw_backtest(
     the forecast is the dyadic state plus one add; errors subtract exact
     inputs — no new float risk beyond the certified fold.
     """
-    arr = daily.groupBy(group_col).agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(F.col(day_col).alias("d"), F.col(value_col).alias("x"))
-            )
-        ).alias("series")
-    )
-    zero = F.struct(
-        F.lit(None).cast("double").alias("l"),
-        F.lit(0.0).alias("b"),
-        F.array_repeat(F.lit(0.0), period).alias("s"),
-        F.lit(0).alias("t"),
-    )
-
-    def step(acc: F.Column, e: F.Column) -> F.Column:
-        x = e.getField("x").cast("double")
-        t = acc.getField("t")
-        idx = t % period
-        sp = F.element_at(acc.getField("s"), idx + 1)
-        first = acc.getField("l").isNull()
-        l_prev, b_prev = acc.getField("l"), acc.getField("b")
-        l_new = F.when(first, x).otherwise(
-            ((x - sp) + (l_prev + b_prev)) / F.lit(2.0)
-        )
-        b_new = F.when(first, F.lit(0.0)).otherwise(
-            ((l_new - l_prev) + b_prev) / F.lit(2.0)
-        )
-        s_new = F.transform(
-            acc.getField("s"),
-            lambda v, i: F.when(
-                i == idx, ((x - l_new) + v) / F.lit(2.0)
-            ).otherwise(v),
-        )
-        return F.struct(
-            l_new.alias("l"), b_new.alias("b"), s_new.alias("s"),
-            (t + 1).alias("t"),
-        )
+    arr = _daily_series(daily, group_col, day_col, value_col)
+    zero, step = _hw_fold(period)
 
     n = F.size("series")
     origins = F.sequence(

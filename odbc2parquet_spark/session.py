@@ -94,20 +94,13 @@ def local_cpus(env=os.environ) -> str:
 
 def _jvm_options() -> str:
     """Driver/executor JVM flags (same reasoning both sides; a real
-    cluster puts these on spark.executor.extraJavaOptions via submit).
-
-    SPARK_GRAFT_CODECACHE_MB optionally sizes the JIT code cache —
-    tools/suite_pressure.py's A/B knob for the suite-inflation carrier."""
-    opts = (
+    cluster puts these on spark.executor.extraJavaOptions via submit)."""
+    return (
         "-XX:+UnlockExperimentalVMOptions -XX:G1NewSizePercent=40"
         " -XX:G1MaxNewSizePercent=70"
         # the JVM's default log output is stdout
         " -Xlog:disable -Xlog:all=warning:stderr"
     )
-    cc = os.environ.get("SPARK_GRAFT_CODECACHE_MB")
-    if cc:
-        opts += f" -XX:ReservedCodeCacheSize={int(cc)}m"
-    return opts
 
 
 def cds_cache_dir(env=os.environ) -> str:

@@ -1541,6 +1541,74 @@ def test_dhash_corrupt_payload_quarantines(spark):
     assert rows[0].dhash is None
 
 
+_WAV = M.synth_wav(bytes(range(0, 256, 3)), 8000, 1, 200)
+_BMP = M.synth_bmp(bytes(range(1, 256, 7)), 9, 8)
+#: payloads no decoder may take, per format
+_BAD = {
+    "pcm": {
+        "magic": b"XXXX" + _WAV[4:],
+        "cut_odd": _WAV[:-3],
+        "cut_even": _WAV[:-4],
+    },
+    "bmp": {
+        "magic": b"XX" + _BMP[2:],
+        "cut": _BMP[:-3],
+        "bpp32": _BMP[:28] + (32).to_bytes(2, "little") + _BMP[30:],
+    },
+}
+#: (operator, format, what a corrupt payload yields)
+_QUARANTINE = [
+    ("decode_audio_samples", "pcm", "null_row"),
+    ("audio_energy_shingles", "pcm", "no_rows"),
+    ("decode_audio_frame_energy", "pcm", "no_rows"),
+    ("audio_tone_power_q15", "pcm", "no_rows"),
+    ("audio_frame_peaks_q15", "pcm", "no_rows"),
+    ("decode_bmp_pixels", "bmp", "null_row"),
+    ("resize_bmp_nearest", "bmp", "null_row"),
+    ("dhash_bmp", "bmp", "null_row"),
+    ("bmp_laplacian_stats", "bmp", "null_row"),
+    ("phash_dct_bmp", "bmp", "null_row"),
+    ("decode_bmp_byte_histogram", "bmp", "no_rows"),
+]
+
+
+@pytest.mark.parametrize("op,fmt,policy", _QUARANTINE, ids=[q[0] for q in _QUARANTINE])
+def test_corrupt_payloads_quarantine(spark, op, fmt, policy):
+    """A wrong magic, a truncated payload and (BMP) a 32-bit image give
+    the operator's documented quarantine, one NULL row or no rows, and
+    never fail the stage; the valid payload in the same Arrow batch
+    decodes exactly as it does alone."""
+    valid = _WAV if fmt == "pcm" else _BMP
+    bad = list(_BAD[fmt].values())
+    decode = getattr(M, op)
+    alone = decode(
+        spark.createDataFrame([(0, bytearray(valid))], ["doc_id", "payload"])
+    ).collect()
+    mixed = spark.createDataFrame(
+        [(i, bytearray(p)) for i, p in enumerate([valid, *bad])], ["doc_id", "payload"]
+    ).coalesce(1)  # one partition: every payload in one batch
+    rows = decode(mixed).collect()
+    assert alone and sorted(r for r in rows if r.doc_id == 0) == sorted(alone)
+    for i, name in enumerate(_BAD[fmt], 1):
+        got = [tuple(r)[1:] for r in rows if r.doc_id == i]
+        want = [(None,) * (len(alone[0]) - 1)] if policy == "null_row" else []
+        assert got == want, name
+
+
+@pytest.mark.parametrize("body", [b"", b"\x00" * 4], ids=["empty", "short"])
+def test_mp4_header_short_mvhd_is_corrupt(body):
+    """An mvhd box too short for its timescale and duration is a corrupt
+    payload (ValueError, so decoders quarantine it): neither an
+    IndexError that fails the stage nor fields read from the next box."""
+    mdat = M._box(b"mdat", b"\x00\x00\x02\x58\x00\x00\x10\x00" * 4)
+    for p in (
+        M._FTYP + M._box(b"moov", M._box(b"mvhd", body)),
+        M._FTYP + M._box(b"moov", M._box(b"mvhd", body)) + mdat,
+    ):
+        with pytest.raises(ValueError):
+            M.parse_mp4_header(p)
+
+
 def test_mmr_prefers_diverse_over_redundant(spark):
     """With a near-duplicate of the first pick and a slightly-less-relevant
     but orthogonal candidate, step 2 must select the orthogonal one."""

@@ -1,10 +1,10 @@
-"""The DuckDB oracles, checked without Spark.
+"""The DuckDB oracles, checked without Spark, and the copy guards.
 
 Every oracle must plan in DuckDB over the sf0.001 tables, so a broken
 composition of shared CTEs (a lost comma, a misspelled CTE name) fails
-here and not in the next full oracle sweep. And each oracle computation
-is written once: no run of string-literal lines in ``queries/`` may be
-pasted at a second place.
+here and not in the next full oracle sweep. And each computation is
+written once: no run of string-literal lines in ``queries/``, and no run
+of code lines in ``operators/``, may be pasted at a second place.
 """
 
 from __future__ import annotations
@@ -19,6 +19,7 @@ from odbc2parquet_spark.catalog import TABLES, table_path
 from odbc2parquet_spark.queries import ORACLES
 
 QUERIES_DIR = Path(__file__).resolve().parent.parent / "odbc2parquet_spark" / "queries"
+OPERATORS_DIR = QUERIES_DIR.parent / "operators"
 WINDOW = 10
 
 
@@ -78,3 +79,88 @@ def test_no_oracle_sql_is_pasted_twice():
         f"{WINDOW} string-literal lines repeat; compose the shared CTE instead: "
         + ", ".join(f"{a} repeats {b}" for a, b in repeats)
     )
+
+
+# Code runs that repeat today, keyed by the top-level definitions holding
+# the later and the earlier copy. Each is a candidate for a shared helper;
+# a new copy is not added here but folded.
+COPIES_ALLOWED = {
+    ("attribution.py:journey_occupancy", "attribution.py:markov_removal_effect"):
+        "same parameter list and journey_transitions call",
+    ("dedup.py:word_shingle_stream", "dedup.py:word_shingles"):
+        "same signature and shingle expression; one is distinct, one a stream",
+    ("sampling.py:temperature_sample", "sampling.py:mixture_sample"):
+        "same threshold join tail",
+    ("similarity.py:ivf_silhouette", "similarity.py:ivf_assign"):
+        "same signature and centroid scoring",
+    ("similarity.py:ivf_search", "similarity.py:brute_force_topk"):
+        "same top-k window tail",
+    ("similarity.py:ivf_pq_residual_search", "similarity.py:ivf_pq_search"):
+        "same parameter list",
+    ("text.py:kneser_ney_scores", "text.py:bigram_lm_scores"):
+        "same bigram explode",
+    ("text.py:bigram_lm_scores_cross", "text.py:kneser_ney_scores"):
+        "same per-document average tail",
+}
+
+
+def _code_lines(path: Path) -> list[tuple[int, str, str]]:
+    """(line number, stripped text, enclosing top-level definition) of
+    every code line: not blank, not a comment, not inside a docstring."""
+    src = path.read_text()
+    tree = ast.parse(src, str(path))
+    docstring: set[int] = set()
+    for node in ast.walk(tree):
+        body = getattr(node, "body", None)
+        if (
+            isinstance(node, (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            and body
+            and isinstance(body[0], ast.Expr)
+            and isinstance(body[0].value, ast.Constant)
+            and isinstance(body[0].value.value, str)
+        ):
+            docstring.update(range(body[0].lineno, body[0].end_lineno + 1))
+    owner: dict[int, str] = {}
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            owner.update(dict.fromkeys(range(node.lineno, node.end_lineno + 1), node.name))
+    return [
+        (i, line.strip(), f"{path.name}:{owner.get(i, '<module>')}")
+        for i, line in enumerate(src.splitlines(), 1)
+        if line.strip() and not line.strip().startswith("#") and i not in docstring
+    ]
+
+
+def repeated_code() -> list[tuple[str, str, tuple[str, str]]]:
+    """(later ``file:line``, earlier ``file:line``, (later definition,
+    earlier definition)) for the first window of every run of code lines
+    in ``operators/`` that appears at two places."""
+    first: dict[tuple[str, ...], tuple[str, str]] = {}
+    repeats = []
+    for path in sorted(OPERATORS_DIR.glob("*.py")):
+        lines = _code_lines(path)
+        prev_repeated = False
+        for k in range(len(lines) - WINDOW + 1):
+            window = tuple(text for _, text, _ in lines[k : k + WINDOW])
+            here = (f"{path.name}:{lines[k][0]}", lines[k][2])
+            repeated = window in first
+            if repeated and not prev_repeated:
+                there = first[window]
+                repeats.append((here[0], there[0], (here[1], there[1])))
+            elif not repeated:
+                first[window] = here
+            prev_repeated = repeated
+    return repeats
+
+
+def test_no_operator_code_is_pasted_twice():
+    new = [(a, b) for a, b, key in repeated_code() if key not in COPIES_ALLOWED]
+    assert not new, (
+        f"{WINDOW} code lines repeat in operators/; share a helper instead: "
+        + ", ".join(f"{a} repeats {b}" for a, b in new)
+    )
+
+
+def test_copy_allowlist_has_no_stale_entry():
+    stale = set(COPIES_ALLOWED) - {key for _, _, key in repeated_code()}
+    assert not stale, f"no longer repeated, drop from COPIES_ALLOWED: {sorted(stale)}"

@@ -10,9 +10,10 @@ Usage:
     python tools/suite_pressure.py [n_queries] [stride]
 Env:
     SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-    SPARK_GRAFT_CODECACHE_MB — when set, get_spark starts the driver JVM
-    with -XX:ReservedCodeCacheSize=<mb>m so an A/B run can test the
-    code-cache hypothesis directly.
+
+The counters report JIT code-cache use but the session has no knob to
+resize the cache: an A/B of that hypothesis adds
+-XX:ReservedCodeCacheSize to ``session._jvm_options`` in a scratch copy.
 
 Prints one JSON line per canary point:
     {"pos": i, "canary_sec": t, "code_cache_mb": ..., "metaspace_mb": ...,
