@@ -111,7 +111,12 @@ def _add_sink_args(p: argparse.ArgumentParser) -> None:
         help="per-column encoding (plain, delta-binary-packed, ...)",
     )
     p.add_argument("--avoid-decimal", action="store_true")
-    p.add_argument("--prefer-varbinary", action="store_true")
+    p.add_argument(
+        "--prefer-varbinary",
+        action="store_true",
+        help="accepted for CLI parity; changes nothing here: Spark writes "
+        "every binary column as variable-length BYTE_ARRAY already",
+    )
     p.add_argument("--column-length-limit", type=int, default=None)
     p.add_argument(
         "--length-limit-action",
@@ -124,8 +129,9 @@ def _add_sink_args(p: argparse.ArgumentParser) -> None:
     p.add_argument(
         "--driver-does-not-support-64bit-integers",
         action="store_true",
-        help="Oracle flag parity: changes the decimal fetch path only "
-        "(target types are unchanged)",
+        help="accepted for CLI parity; changes nothing here: the reference "
+        "changes only its decimal fetch path, and the target types are the "
+        "same",
     )
     p.add_argument("--partition-by", action="append", default=[], metavar="COLUMN",
                    help="hive-style output partitioning (directory mode)")
@@ -398,8 +404,6 @@ def main(argv: list[str] | None = None) -> int:
 
         mapping = MappingOptions(
             avoid_decimal=args.avoid_decimal,
-            prefer_varbinary=args.prefer_varbinary,
-            driver_supports_i64=not args.driver_does_not_support_64bit_integers,
             column_length_limit=args.column_length_limit,
             length_limit_action=args.length_limit_action,
         )

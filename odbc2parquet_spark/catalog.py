@@ -103,19 +103,16 @@ def spread_scan(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-def register_tables(
-    spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    """Create one temp view per parquet table; returns the DataFrames.
-
-    Missing files are skipped so callers can register partial directories.
-    """
+def register_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Create one temp view per ``<name>.parquet`` in ``sf_dir``, named
+    ``name`` (a name that is not a plain identifier needs backquotes in
+    SQL); returns the DataFrames."""
     out: dict[str, DataFrame] = {}
-    for name in tables:
-        path = table_path(sf_dir, name)
-        if not os.path.exists(path):
+    for entry in sorted(os.listdir(sf_dir)):
+        name, ext = os.path.splitext(entry)
+        if ext != ".parquet":
             continue
         df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
+        df.createOrReplaceTempView("`" + name.replace("`", "``") + "`")
         out[name] = df
     return out

@@ -20,7 +20,6 @@ the driver.
 
 from __future__ import annotations
 
-import sys
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,18 +39,12 @@ class Engine:
 
     @classmethod
     def for_sf_dir(cls, spark: SparkSession, sf_dir: str) -> "Engine":
-        """Engine over the testdata tables registered as views."""
+        """Engine over every ``<name>.parquet`` of ``sf_dir``, registered as views."""
         register_tables(spark, sf_dir)
         return cls(spark)
 
     def query(self, sql: str, params: Sequence | None = None) -> DataFrame:
-        """Execute SQL with optional positional ``?`` parameters.
-
-        ``sql == "-"`` reads the query text from stdin, like the reference
-        (src/query.rs:118-126).
-        """
-        if sql == "-":
-            sql = sys.stdin.read()
+        """Execute SQL with optional positional ``?`` parameters."""
         if params:
             df = self.spark.sql(sql, args=list(params))
         else:
@@ -86,7 +79,7 @@ class Engine:
         """The full ``query`` subcommand analogue: SQL -> shaped parquet.
 
         ``mapping`` applies the reference's type-mapping switches
-        (--avoid-decimal / --prefer-varbinary / --column-length-limit) to
+        (--avoid-decimal / --column-length-limit) to
         the result schema before writing — declarative casts, so Catalyst
         still prunes and pushes down beneath them.
         """

@@ -18,6 +18,12 @@ and the matrix below gives the same answers, with two documented divergences:
 - Spark timestamps are microsecond instants: precision >= 7 becomes an
   explicit epoch-nanosecond ``LongType`` with the reference's
   1677-09-21..2262-04-11 range error (timestamp_precision.rs:69-81).
+
+Two reference flags have nothing to switch here. Spark writes every
+``BinaryType`` as variable-length BYTE_ARRAY, the layout
+``--prefer-varbinary`` asks for (column_strategy.rs:155-162), and
+``--driver-does-not-support-64bit-integers`` changes only the reference's
+fetch path, not a target type (decimal.rs:86-108).
 """
 
 from __future__ import annotations
@@ -41,8 +47,6 @@ class MappingOptions:
     """Port of the reference's MappingOptions (column_strategy.rs:53-60)."""
 
     avoid_decimal: bool = False  # --avoid-decimal
-    prefer_varbinary: bool = False  # --prefer-varbinary
-    driver_supports_i64: bool = True  # false for Oracle (--driver-does-not-support-64bit-integers)
     column_length_limit: int | None = None  # --column-length-limit analogue
     # what to do when a value exceeds column_length_limit: the reference
     # fails loudly with the column name and a remediation hint
@@ -70,10 +74,9 @@ class SourceType:
 
 @dataclass
 class ColumnMapping:
-    """Result of planning one column: target type + transform + notes."""
+    """Result of planning one column: target type + transform."""
 
     spark_type: T.DataType
-    note: str = ""
     # transform from the raw source column to the target representation;
     # identity casts are expressed as .cast for clarity.
     _fn: object = field(default=None, repr=False)
@@ -96,20 +99,17 @@ def _decimal_mapping(p: int, s: int, opts: MappingOptions) -> ColumnMapping:
     if opts.avoid_decimal:
         if s != 0:
             # scale != 0: text of width p+2 (decimal.rs:36-40)
-            return ColumnMapping(T.StringType(), "avoid_decimal: s!=0 -> text")
+            return ColumnMapping(T.StringType())
         if p <= 9:
-            return ColumnMapping(T.IntegerType(), "avoid_decimal: p<=9 s=0 -> int32")
+            return ColumnMapping(T.IntegerType())
         if p <= 18:
-            # int64 regardless of driver i64 support — without it the
-            # reference only changes the FETCH path (text -> i64 convert,
-            # decimal.rs:86-108), the target type stays Integer(64).
-            return ColumnMapping(T.LongType(), "avoid_decimal: p<=18 s=0 -> int64")
+            return ColumnMapping(T.LongType())
         # p 19..38 stays decimal even under avoid_decimal: the reference's
         # (0..=38, _) arm (DecimalAsBinary, decimal.rs:124) has no
         # avoid_decimal branch.
     if p > 38:
-        return ColumnMapping(T.StringType(), "p>38 -> text (decimal.rs:125-133)")
-    return ColumnMapping(T.DecimalType(p, s), f"decimal({p},{s})")
+        return ColumnMapping(T.StringType())  # decimal.rs:125-133
+    return ColumnMapping(T.DecimalType(p, s))
 
 
 def _timestamp_unit(precision: int) -> str:
@@ -163,7 +163,7 @@ def map_source_type(
         # unsigned TINYINT (0..255) does not fit ByteType -> ShortType
         # (column_strategy.rs:145-154 maps it to Integer(8, unsigned)).
         if st.unsigned:
-            return ColumnMapping(T.ShortType(), "unsigned tinyint -> int16")
+            return ColumnMapping(T.ShortType())
         return ColumnMapping(T.ByteType())
     if k == "smallint":
         return ColumnMapping(T.ShortType())
@@ -183,52 +183,37 @@ def map_source_type(
         # the ms tier (timestamp_precision.rs:17-23)
         unit = _timestamp_unit(st.precision if st.precision is not None else 7)
         if unit == "ns":
-            return ColumnMapping(
-                T.LongType(), "epoch-ns long (precision>=7)", _fn=_timestamp_ns_transform
-            )
+            return ColumnMapping(T.LongType(), _fn=_timestamp_ns_transform)
         # ms/us both fit Spark's microsecond TimestampNTZ; the parquet writer
         # records the unit. Wall-clock semantics (utc=false) -> NTZ.
-        return ColumnMapping(T.TimestampNTZType(), f"timestamp({st.precision}) -> {unit}")
+        return ColumnMapping(T.TimestampNTZType())
     if k in ("timestamptz", "datetimeoffset"):
         # instant semantics, normalized to UTC (timestamp_tz.rs:92-108) --
         # Spark TimestampType is exactly an instant; session tz pinned UTC.
-        return ColumnMapping(T.TimestampType(), "tz-normalized instant")
+        return ColumnMapping(T.TimestampType())
     if k == "time":
         from odbc2parquet_spark.functions.timeutil import time_text_to_int
 
         unit = _timestamp_unit(st.precision or 0)
         target = T.IntegerType() if unit == "ms" else T.LongType()
-        return ColumnMapping(
-            target,
-            f"time({st.precision}) -> {unit}-since-midnight",
-            _fn=lambda c, u=unit: time_text_to_int(c, u),
-        )
-    if k == "binary":
-        # fixed-length BINARY(n) -> FLBA(n) unless --prefer-varbinary
-        # (column_strategy.rs:155-162). Spark has only BinaryType; the
-        # fixed-length property is recorded as a note (physical layout is a
-        # writer concern Spark does not expose).
-        note = "varbinary" if opts.prefer_varbinary else f"fixed({st.length})"
-        return ColumnMapping(T.BinaryType(), note)
-    if k in ("varbinary", "longvarbinary"):
+        return ColumnMapping(target, _fn=lambda c, u=unit: time_text_to_int(c, u))
+    if k in ("binary", "varbinary", "longvarbinary"):
+        # BINARY(n) included: Spark writes BinaryType as BYTE_ARRAY only
         return ColumnMapping(T.BinaryType())
     if k in ("char", "varchar", "wchar", "wvarchar", "longvarchar", "wlongvarchar", "text"):
         if opts.column_length_limit:
             lim = opts.column_length_limit
             if opts.length_limit_action == "truncate":
+                # the opt-in lossy path
                 return ColumnMapping(
-                    T.StringType(),
-                    f"text truncated to {lim} (opt-in lossy path)",
-                    _fn=lambda c, n=lim: F.substring(c.cast("string"), 1, n),
+                    T.StringType(), _fn=lambda c, n=lim: F.substring(c.cast("string"), 1, n)
                 )
             return ColumnMapping(
-                T.StringType(),
-                f"text length-checked against {lim} (error on exceed)",
-                _fn=lambda c, n=lim, name=column_name: _length_guard(c, n, name),
+                T.StringType(), _fn=lambda c, n=lim, name=column_name: _length_guard(c, n, name)
             )
         return ColumnMapping(T.StringType())
     # unknown -> text fallback (column_strategy.rs:224-239)
-    return ColumnMapping(T.StringType(), "unknown type -> text fallback")
+    return ColumnMapping(T.StringType())
 
 
 def _length_guard(col: Column, limit: int, column_name: str) -> Column:
@@ -264,8 +249,6 @@ def source_type_of(dt: T.DataType) -> SourceType | None:
         return SourceType("decimal", precision=dt.precision, scale=dt.scale)
     if isinstance(dt, T.StringType):
         return SourceType("varchar")
-    if isinstance(dt, T.BinaryType):
-        return SourceType("varbinary")
     return None
 
 
@@ -278,7 +261,7 @@ def apply_mapping_options(df, opts: MappingOptions):
     declarative — every transform is a Catalyst expression, so pushdown
     and codegen are unaffected.
     """
-    if not (opts.avoid_decimal or opts.prefer_varbinary or opts.column_length_limit):
+    if not (opts.avoid_decimal or opts.column_length_limit):
         return df
     cols = []
     for f in df.schema.fields:

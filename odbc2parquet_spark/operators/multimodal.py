@@ -703,6 +703,8 @@ def parse_mp4_samples(p: bytes) -> list[tuple[int, int]]:
                 descend(body_s, body_e, path + (kind,))
             elif kind == b"stsz" and path and path[-1] == b"stbl":
                 count = int.from_bytes(p[body_s + 8 : body_s + 12], "big")
+                if body_s + 12 + 4 * count > body_e:
+                    raise ValueError("stsz sample count runs past its box")
                 sizes = [
                     int.from_bytes(p[body_s + 12 + 4 * k : body_s + 16 + 4 * k], "big")
                     for k in range(count)

@@ -323,14 +323,6 @@ def session_conf(master: str | None = None, env=os.environ) -> tuple[str, dict[s
         # bounded: cached entries are generated classes, not data.
         "spark.sql.codegen.cache.maxEntries": "2000",
     }
-    # SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2": session-level conf overrides for
-    # measurement studies (e.g. spark.sql.execution.arrow.maxRecordsPerBatch
-    # sweeps, spark.python.worker.reuse A/Bs) without editing code — the
-    # production defaults above stay the committed contract.
-    extra = env.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for kv in filter(None, (s.strip() for s in extra.split(";"))):
-        k, _, v = kv.partition("=")
-        conf[k.strip()] = v.strip()
     cpus = local_cpus(env)
     if master is None:
         master = f"local[{cpus}]"

@@ -57,12 +57,19 @@ COLUMN_ENCODINGS = {
 }
 
 
-#: codecs whose level knob Spark's parquet writer honors, with the
-#: parquet-mr property that carries it (write options are merged into the
-#: job's hadoop conf by Spark's file sink)
-_SPARK_LEVEL_PROPS = {"zstd": "parquet.compression.codec.zstd.level"}
-#: codecs pyarrow's ParquetWriter accepts a compression_level for
-_PYARROW_LEVEL_CODECS = {"zstd", "gzip", "brotli"}
+#: codecs whose compression level each writer carries: Spark's parquet
+#: writer through the parquet-mr property ``parquet.compression.codec.<codec>.level``
+#: (write options are merged into the job's hadoop conf by Spark's file
+#: sink), pyarrow's ParquetWriter through ``compression_level``
+_LEVEL_CODECS = {"spark": {"zstd"}, "arrow": {"zstd", "gzip", "brotli"}}
+
+#: options each output mode cannot honour: hive partitioning, range
+#: clustering and the pyarrow encodings sink write one file per task
+#: (directory mode); stdout carries exactly one file
+_MODE_REJECTS = {
+    "file": ("partition_by", "cluster_by", "column_encodings"),
+    "stdout": ("row_groups_per_file", "file_size_threshold", "partition_by", "cluster_by"),
+}
 
 
 @dataclass
@@ -70,9 +77,8 @@ class SinkOptions:
     compression: str = "zstd"  # reference default (enum_args.rs:56-59)
     #: --column-compression-level-default (reference src/main.rs:160-168;
     #: zstd level 3 is the reference default). None = codec default.
-    #: Spark's writer carries the level for zstd via the parquet-mr
-    #: property; the pyarrow encodings sink passes it for
-    #: zstd/gzip/brotli. Unsupported codec+level combinations raise.
+    #: ``_LEVEL_CODECS`` lists the codecs each writer carries a level
+    #: for; other codec+level combinations raise.
     compression_level: int | None = None
     batch_size_rows: int | None = None  # rows per row-group/file unit
     batch_memory_bytes: int | None = None  # memory cap -> rows via bytes/row
@@ -86,9 +92,9 @@ class SinkOptions:
     single_file: bool = False  # CLI-parity: exactly one .par file
     #: ``{column: encoding}`` with reference encoding names
     #: (``COLUMN:ENCODING`` pairs, enum_args.rs:72-97). Spark's writer can't
-    #: set per-column encodings, so this routes through the distributed
-    #: pyarrow sink (one file per task via mapInArrow — still no driver
-    #: materialization).
+    #: set per-column encodings, so directory mode routes this through the
+    #: distributed pyarrow sink (one file per task via mapInArrow — still
+    #: no driver materialization); stdout's writer is pyarrow already.
     column_encodings: dict[str, str] | None = None
     #: hive-style directory partitioning (directory mode only) — at 100 TB
     #: this is what makes downstream partition pruning possible.
@@ -96,35 +102,77 @@ class SinkOptions:
     #: range-cluster the output on these columns: repartitionByRange +
     #: sortWithinPartitions so each file/row-group carries a DISJOINT
     #: min/max range in its parquet stats — readers filtering on the
-    #: cluster column skip whole files (stats-based data skipping).
+    #: cluster column skip whole files (stats-based data skipping). The
+    #: range count is left to spark.sql.shuffle.partitions / AQE.
     cluster_by: tuple[str, ...] = ()
-    #: explicit range-partition count for cluster_by (None = let
-    #: spark.sql.shuffle.partitions / AQE decide)
-    cluster_partitions: int | None = None
-    #: ``{column: unit}`` (unit in ms/us/ns): write these int-since-midnight
-    #: columns with a REAL Parquet TIME logical type (reference
-    #: time.rs:19-78 annotates TIME(p); Spark has no TIME type, so the
-    #: mapping's ints lose the annotation on the Spark writer path — the
-    #: pyarrow sink restores it by casting the Arrow batches to
-    #: time32(ms)/time64(us|ns) before writing). Directory mode only.
-    time_columns: dict[str, str] | None = None
 
 
-def _compression_options(opts: SinkOptions) -> dict[str, str]:
-    """Writer options for codec + optional level on the SPARK write path."""
-    out = {"compression": opts.compression}
-    if opts.compression_level is not None:
-        prop = _SPARK_LEVEL_PROPS.get(opts.compression)
-        if prop is None:
-            raise ValueError(
-                f"compression_level is not supported for codec "
-                f"{opts.compression!r} on the Spark write path "
-                f"(supported: {sorted(_SPARK_LEVEL_PROPS)}; the pyarrow "
-                f"encodings sink additionally supports "
-                f"{sorted(_PYARROW_LEVEL_CODECS)})"
-            )
-        out[prop] = str(opts.compression_level)
-    return out
+def _check_mode(opts: SinkOptions, mode: str) -> None:
+    """Raise when ``opts`` sets an option the output ``mode`` cannot honour."""
+    rejected = [name for name in _MODE_REJECTS[mode] if getattr(opts, name)]
+    if rejected:
+        raise ValueError(
+            f"{', '.join(rejected)} not supported in {mode} mode (partition_by, "
+            f"cluster_by and column_encodings require directory mode; stdout "
+            f"writes one file, so it takes no splitting flags)"
+        )
+
+
+def _compression_level(opts: SinkOptions, writer: str) -> int | None:
+    """``opts.compression_level``, if ``writer`` ("spark" or "arrow")
+    carries a level for the codec; raises otherwise."""
+    level = opts.compression_level
+    if level is not None and opts.compression not in _LEVEL_CODECS[writer]:
+        raise ValueError(
+            f"compression_level is not supported for codec "
+            f"{opts.compression!r} on the {writer} writer (codecs with a "
+            f"level: {', '.join(f'{w} {sorted(c)}' for w, c in _LEVEL_CODECS.items())})"
+        )
+    return level
+
+
+def _arrow_writer(opts: SinkOptions, columns: list[str]):
+    """Validate ``opts`` for pyarrow and return ``open(sink, schema)``,
+    which opens a ParquetWriter with the codec, level and per-column
+    encodings of ``opts``. Validation runs where this is called (the
+    driver); the opener captures only plain values, so it pickles to
+    executors."""
+    col_encodings = opts.column_encodings or {}
+    unknown = {c: e for c, e in col_encodings.items() if e not in COLUMN_ENCODINGS}
+    if unknown:
+        raise ValueError(
+            f"unknown column encodings {unknown}; valid: {sorted(COLUMN_ENCODINGS)}"
+        )
+    missing = set(col_encodings) - set(columns)
+    if missing:
+        raise ValueError(f"column_encodings for absent columns: {sorted(missing)}")
+    kwargs = {
+        "compression": opts.compression,
+        "compression_level": _compression_level(opts, "arrow"),
+    }
+    if col_encodings:
+        kwargs["column_encoding"] = {c: COLUMN_ENCODINGS[e] for c, e in col_encodings.items()}
+        # pyarrow requires dictionary off for explicitly-encoded columns
+        kwargs["use_dictionary"] = [c for c in columns if c not in col_encodings]
+
+    def open_writer(sink, schema):
+        import pyarrow.parquet as pq
+
+        return pq.ParquetWriter(sink, schema, **kwargs)
+
+    return open_writer
+
+
+def _spark_write(df: DataFrame, path: str, opts: SinkOptions, max_records: int) -> None:
+    """Spark's parquet writer with the codec, level and partitioning of
+    ``opts``; ``max_records`` caps the rows of a file (0 = no cap)."""
+    w = df.write.mode("overwrite").option("compression", opts.compression)
+    level = _compression_level(opts, "spark")
+    if level is not None:
+        w = w.option(f"parquet.compression.codec.{opts.compression}.level", str(level))
+    if opts.partition_by:
+        w = w.partitionBy(*opts.partition_by)
+    w.option("maxRecordsPerFile", max_records).parquet(path)
 
 
 def parse_bytesize(value: int | str) -> int:
@@ -210,22 +258,23 @@ def write_parquet_stdout(
     a row group straight into the pipe. Memory is bounded by ONE batch
     (the reference's own one-batch-in-memory claim); no temp file, no
     second IO pass. Splitting flags are rejected like the reference
-    rejects them for stdout (src/main.rs:447-451).
+    rejects them for stdout (src/main.rs:447-451), and so are the
+    directory-mode options; per-column encodings are honoured.
 
     ``out`` overrides the sink (any writable binary file-like) — used by
     tests; defaults to ``sys.stdout.buffer``. ``column_length_limit`` is
     --column-length-limit, the cap on a string column's estimated bytes.
     Returns bytes written.
     """
+    import io
     import sys
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
     opts = opts or SinkOptions()
-    if opts.row_groups_per_file or opts.file_size_threshold:
-        raise ValueError("file splitting is not supported when writing to stdout")
+    _check_mode(opts, "stdout")
+    open_writer = _arrow_writer(opts, df.columns)
     if opts.no_empty_file and df.isEmpty():
         return 0
 
@@ -233,17 +282,6 @@ def write_parquet_stdout(
     batch_rows = rows_per_batch(
         opts, estimate_bytes_per_row(df.schema, column_length_limit)
     )
-    codec = opts.compression
-    kwargs = {}
-    if opts.compression_level is not None:
-        if codec not in _PYARROW_LEVEL_CODECS:
-            raise ValueError(
-                f"compression_level is not supported for codec {codec!r} "
-                f"(stdout sink supports {sorted(_PYARROW_LEVEL_CODECS)})"
-            )
-        kwargs["compression_level"] = opts.compression_level
-
-    import io
 
     class _CountingSink(io.RawIOBase):
         """File-like shim pyarrow can write through: counts bytes and,
@@ -307,7 +345,7 @@ def write_parquet_stdout(
             pa.RecordBatch.from_arrays(arrays, schema=schema)
         )
 
-    writer = pq.ParquetWriter(sink, schema, compression=codec, **kwargs)
+    writer = open_writer(sink, schema)
     try:
         buf: list = []
         for row in df.toLocalIterator(prefetchPartitions=False):
@@ -341,12 +379,13 @@ def write_parquet(
     """
     opts = opts or SinkOptions()
     file_mode = opts.single_file or opts.row_groups_per_file or opts.file_size_threshold
-
-    if file_mode and os.path.isdir(path):
-        # shutil.move would silently drop the part INSIDE the directory;
-        # the reference treats a directory output path as an error
-        # (tests/integration.rs:181).
-        raise ValueError(f"output path {path!r} is an existing directory")
+    if file_mode:
+        _check_mode(opts, "file")
+        if os.path.isdir(path):
+            # shutil.move would silently drop the part INSIDE the directory;
+            # the reference treats a directory output path as an error
+            # (tests/integration.rs:181).
+            raise ValueError(f"output path {path!r} is an existing directory")
 
     if opts.no_empty_file and df.isEmpty():
         return []
@@ -354,30 +393,13 @@ def write_parquet(
     bpr = estimate_bytes_per_row(df.schema, column_length_limit)
     batch_rows = rows_per_batch(opts, bpr)
 
-    if (opts.partition_by or opts.cluster_by) and file_mode:
-        raise ValueError("partition_by/cluster_by require directory mode")
     if opts.cluster_by:
         cols = [df[c] for c in opts.cluster_by]
-        if opts.cluster_partitions:
-            df = df.repartitionByRange(opts.cluster_partitions, *cols)
-        else:
-            df = df.repartitionByRange(*cols)
-        df = df.sortWithinPartitions(*cols)
-
-    if opts.column_encodings or opts.time_columns:
-        if file_mode:
-            raise ValueError(
-                "column_encodings/time_columns require directory mode (the "
-                "pyarrow sink); splitting/single_file flags are file-mode only"
-            )
-        return _write_with_encodings(df, path, opts, batch_rows)
-
-    writer = df.write.mode("overwrite").options(**_compression_options(opts))
-
+        df = df.repartitionByRange(*cols).sortWithinPartitions(*cols)
+    if opts.column_encodings:
+        return _write_with_encodings(df, path, opts)
     if not file_mode:
-        if opts.partition_by:
-            writer = writer.partitionBy(*opts.partition_by)
-        writer.option("maxRecordsPerFile", batch_rows).parquet(path)
+        _spark_write(df, path, opts, batch_rows)
         return [path]
 
     # -- file mode: parallel write to a staging dir, deterministic rename --
@@ -392,16 +414,10 @@ def write_parquet(
         records_per_file = max(1, opts.file_size_threshold // bpr)
     else:
         records_per_file = 0  # single file
+        df = df.coalesce(1)
 
     staging = path + ".__staging__"
-    w = df.write.mode("overwrite").options(**_compression_options(opts))
-    if records_per_file:
-        w = w.option("maxRecordsPerFile", records_per_file)
-    else:
-        df = df.coalesce(1)
-        w = df.write.mode("overwrite").options(**_compression_options(opts))
-    w.parquet(staging)
-
+    _spark_write(df, staging, opts, records_per_file)
     parts = sorted(glob.glob(os.path.join(staging, "part-*")))
 
     if opts.file_size_threshold and parts:
@@ -433,14 +449,7 @@ def write_parquet(
             # task count sized for ~32 capped files per task so
             # over-split parts can actually merge.
             tasks = max(1, math.ceil(total_rows / actual_rpf / 32))
-            (
-                spark.read.parquet(staging)
-                .coalesce(tasks)
-                .write.mode("overwrite")
-                .options(**_compression_options(opts))
-                .option("maxRecordsPerFile", actual_rpf)
-                .parquet(nxt)
-            )
+            _spark_write(spark.read.parquet(staging).coalesce(tasks), nxt, opts, actual_rpf)
             shutil.rmtree(staging, ignore_errors=True)
             staging = nxt
             parts = sorted(glob.glob(os.path.join(staging, "part-*")))
@@ -517,9 +526,7 @@ def _finalize_parts(parts: list[str], path: str, opts: SinkOptions, staging: str
     return produced
 
 
-def _write_with_encodings(
-    df: DataFrame, path: str, opts: SinkOptions, batch_rows: int
-) -> list[str]:
+def _write_with_encodings(df: DataFrame, path: str, opts: SinkOptions) -> list[str]:
     """Distributed pyarrow sink honoring per-column encodings (A13,
     enum_args.rs:72-97).
 
@@ -531,34 +538,7 @@ def _write_with_encodings(
     the reference's tempfile-until-finalized commit
     (src/query/current_file.rs:14-80).
     """
-    col_encodings = opts.column_encodings or {}
-    unknown = {c: e for c, e in col_encodings.items() if e not in COLUMN_ENCODINGS}
-    if unknown:
-        raise ValueError(
-            f"unknown column encodings {unknown}; valid: {sorted(COLUMN_ENCODINGS)}"
-        )
-    missing = set(col_encodings) - set(df.columns)
-    if missing:
-        raise ValueError(f"column_encodings for absent columns: {sorted(missing)}")
-
-    time_cols = opts.time_columns or {}
-    bad_units = {c: u for c, u in time_cols.items() if u not in ("ms", "us", "ns")}
-    if bad_units:
-        raise ValueError(f"time_columns units must be ms/us/ns, got {bad_units}")
-    missing_t = set(time_cols) - set(df.columns)
-    if missing_t:
-        raise ValueError(f"time_columns for absent columns: {sorted(missing_t)}")
-
-    encodings = {c: COLUMN_ENCODINGS[e] for c, e in col_encodings.items()}
-    # pyarrow requires dictionary off for explicitly-encoded columns
-    dict_cols = [c for c in df.columns if c not in encodings]
-    compression = opts.compression
-    compression_level = opts.compression_level
-    if compression_level is not None and compression not in _PYARROW_LEVEL_CODECS:
-        raise ValueError(
-            f"compression_level is not supported for codec {compression!r} "
-            f"(pyarrow sink supports {sorted(_PYARROW_LEVEL_CODECS)})"
-        )
+    open_writer = _arrow_writer(opts, df.columns)
     out_dir = path
     os.makedirs(out_dir, exist_ok=True)
     for stale in glob.glob(os.path.join(out_dir, "part-*")):
@@ -566,43 +546,16 @@ def _write_with_encodings(
 
     def write_partition(batches):
         import pyarrow as pa
-        import pyarrow.parquet as pq
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
         final = os.path.join(out_dir, f"part-{pid:05d}.parquet")
         tmp = final + ".tmp"
         writer = None
-
-        def cast_times(batch):
-            """int-since-midnight -> Arrow TIME so the parquet footer
-            carries the TIME(ms/us/ns) logical annotation (B7)."""
-            if not time_cols:
-                return batch
-            arrays, fields = [], []
-            for i, field in enumerate(batch.schema):
-                arr = batch.column(i)
-                unit = time_cols.get(field.name)
-                if unit == "ms":
-                    arr = arr.cast(pa.int32()).cast(pa.time32("ms"))
-                elif unit in ("us", "ns"):
-                    arr = arr.cast(pa.int64()).cast(pa.time64(unit))
-                arrays.append(arr)
-                fields.append(pa.field(field.name, arr.type, field.nullable))
-            return pa.RecordBatch.from_arrays(arrays, schema=pa.schema(fields))
-
         try:
             for batch in batches:
-                batch = cast_times(batch)
                 if writer is None:
-                    writer = pq.ParquetWriter(
-                        tmp,
-                        batch.schema,
-                        compression=compression,
-                        compression_level=compression_level,
-                        use_dictionary=dict_cols,
-                        column_encoding=encodings,
-                    )
+                    writer = open_writer(tmp, batch.schema)
                 writer.write_batch(batch)
             if writer is not None:
                 writer.close()

@@ -114,7 +114,7 @@ def _executemany_partition(
     col_positions: list[int],
     connection_factory: Callable,
     batch_rows: int,
-    row_counter=None,
+    row_counter,
 ) -> None:
     """Runs on executors: one connection per partition, batched executemany.
 
@@ -140,10 +140,26 @@ def _executemany_partition(
         if batch:
             cur.executemany(statement, batch)
         conn.commit()
-        if row_counter is not None:
-            row_counter.add(n)
+        row_counter.add(n)
     finally:
         conn.close()
+
+
+def _bulk_execute(
+    df: DataFrame, statement: str, col_positions: list[int],
+    connection_factory: Callable, batch_rows: int,
+) -> int:
+    """Execute ``statement`` once per row of ``df`` through every
+    partition's own connection; returns the rows written, counted in the
+    same pass."""
+    dtypes = [f.dataType for f in df.schema.fields]
+    counter = df.sparkSession.sparkContext.accumulator(0)
+    df.foreachPartition(
+        lambda rows: _executemany_partition(
+            rows, statement, dtypes, col_positions, connection_factory, batch_rows, counter
+        )
+    )
+    return counter.value
 
 
 def footer_row_count(df: DataFrame) -> int:
@@ -190,16 +206,9 @@ def insert_parquet(
     if connection_factory is None:
         raise ValueError("need jdbc_url or connection_factory")
     statement = generate_insert_statement(table, df.columns)
-    dtypes = [f.dataType for f in df.schema.fields]
-    positions = list(range(len(df.columns)))
-    # row count rides the write pass via an accumulator — one scan total
-    counter = spark.sparkContext.accumulator(0)
-    df.foreachPartition(
-        lambda rows: _executemany_partition(
-            rows, statement, dtypes, positions, connection_factory, batch_rows, counter
-        )
+    return _bulk_execute(
+        df, statement, list(range(len(df.columns))), connection_factory, batch_rows
     )
-    return counter.value
 
 
 def execute_parquet(
@@ -222,11 +231,4 @@ def execute_parquet(
             f"placeholder column(s) not in parquet file: {', '.join(missing)}"
         )
     positions = [col_index[n] for n in names]
-    dtypes = [f.dataType for f in df.schema.fields]
-    counter = spark.sparkContext.accumulator(0)
-    df.foreachPartition(
-        lambda rows: _executemany_partition(
-            rows, positional, dtypes, positions, connection_factory, batch_rows, counter
-        )
-    )
-    return counter.value
+    return _bulk_execute(df, positional, positions, connection_factory, batch_rows)

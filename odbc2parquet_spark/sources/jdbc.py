@@ -14,7 +14,7 @@ at `.load()` time if the driver class is absent.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -29,17 +29,9 @@ class ConnectOpts:
     user: str | None = None
     password: str | None = None
     driver: str | None = None  # driver class, e.g. org.postgresql.Driver
-    options: dict = field(default_factory=dict)
 
     def to_options(self) -> dict:
-        out = {"url": self.url, **self.options}
-        if self.user is not None:
-            out["user"] = self.user
-        if self.password is not None:
-            out["password"] = self.password
-        if self.driver is not None:
-            out["driver"] = self.driver
-        return out
+        return {k: v for k, v in vars(self).items() if v is not None}
 
 
 #: rows per JDBC fetch: the reference's bulk batch (batch_size_limit.rs:6-15)

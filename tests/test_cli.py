@@ -25,16 +25,25 @@ def test_cli_query_single_file(spark, sf_dir, tmp_path, capsys):
     assert t.num_rows == 5 and t.column_names == ["r_regionkey", "r_name"]
 
 
-def test_cli_query_params_and_stdin_flagparity(spark, sf_dir, tmp_path, capsys):
+def test_cli_query_params_and_stdin_flagparity(spark, sf_dir, tmp_path, capsys, monkeypatch):
+    # "-" reads the statement from stdin (src/query.rs:118-126); the ?
+    # parameters still bind against it
+    import io
+
+    monkeypatch.setattr(
+        "sys.stdin", io.StringIO("SELECT n_nationkey FROM nation WHERE n_regionkey = ?")
+    )
     out = str(tmp_path / "o")
     rc = main(
         [
             "query",
             "--tables-dir", sf_dir,
             "--column-compression-default", "snappy",
-            "--sequential-fetching",  # parity no-op
+            "--sequential-fetching",  # parity no-ops
+            "--prefer-varbinary",
+            "--driver-does-not-support-64bit-integers",
             out,
-            "SELECT n_nationkey FROM nation WHERE n_regionkey = ?",
+            "-",
             "2",
         ]
     )
@@ -42,6 +51,59 @@ def test_cli_query_params_and_stdin_flagparity(spark, sf_dir, tmp_path, capsys):
     produced = json.loads(capsys.readouterr().out)["written"]
     assert produced == [out]
     assert spark.read.parquet(out).count() == 5
+
+
+def test_cli_tables_dir_registers_every_parquet_file(spark, tmp_path, capsys):
+    """--tables-dir registers every <name>.parquet as a view, not only the
+    test corpus's table names."""
+    tables = tmp_path / "tables"
+    spark.range(7).selectExpr("id", "id * 2 AS amount").coalesce(1).write.parquet(
+        str(tables / "sales.parquet")
+    )
+    spark.range(3).coalesce(1).write.parquet(str(tables / "sales-2024.parquet"))
+    (tables / "notes.txt").write_text("not a table")
+    out = str(tmp_path / "sales.par")
+    rc = main(
+        ["query", "--tables-dir", str(tables), out,
+         "SELECT SUM(amount) AS total, (SELECT COUNT(*) FROM `sales-2024`) AS n FROM sales"]
+    )
+    assert rc == 0
+    assert json.loads(capsys.readouterr().out)["written"] == [out]
+    assert pq.read_table(out).to_pylist() == [{"total": 42, "n": 3}]
+
+
+def test_every_query_option_is_set_by_the_cli_and_read():
+    """No dead option: each field of SinkOptions and MappingOptions is a
+    keyword where __main__.py builds that object, and some module of the
+    package other than __main__.py reads it as an attribute."""
+    import ast
+    import dataclasses
+    import glob
+
+    import odbc2parquet_spark
+    from odbc2parquet_spark.mappings import MappingOptions
+    from odbc2parquet_spark.sinks.parquet_sink import SinkOptions
+
+    passed: dict[str, set[str]] = {"SinkOptions": set(), "MappingOptions": set()}
+    read: set[str] = set()
+    pkg = os.path.dirname(odbc2parquet_spark.__file__)
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if os.path.basename(path) == "__main__.py":
+                if isinstance(node, ast.Call) and getattr(node.func, "id", None) in passed:
+                    passed[node.func.id] |= {kw.arg for kw in node.keywords}
+            elif isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
+                read.add(node.attr)
+    dead = []
+    for cls in (SinkOptions, MappingOptions):
+        for f in dataclasses.fields(cls):
+            if f.name not in passed[cls.__name__]:
+                dead.append(f"{cls.__name__}.{f.name}: no CLI flag sets it")
+            if f.name not in read:
+                dead.append(f"{cls.__name__}.{f.name}: nothing reads it")
+    assert not dead, dead
 
 
 def test_cli_exec_via_sqlite(spark, sf_dir, tmp_path, capsys):

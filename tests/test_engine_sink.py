@@ -6,12 +6,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from odbc2parquet_spark.engine import Engine
-from odbc2parquet_spark.sinks.parquet_sink import (
-    SinkOptions,
-    path_with_suffix,
-    rows_per_batch,
-    write_parquet,
-)
+from odbc2parquet_spark.sinks.parquet_sink import SinkOptions, path_with_suffix, rows_per_batch
 
 
 @pytest.fixture(scope="module")
@@ -128,11 +123,33 @@ def test_path_with_suffix():
     assert path_with_suffix("/x/out.par", 12, 4) == "/x/out_0012.par"
 
 
-def test_stdout_sink_unsupported_documented(engine):
-    # A8 (stdout streaming) has no Spark analogue — SURVEY §7 risk register;
-    # the sink API takes paths only, so there's nothing to assert beyond
-    # the write_parquet contract.
-    assert callable(write_parquet)
+def test_stdout_sink_honours_encodings_and_rejects_directory_options(spark):
+    """The stdout writer takes --parquet-column-encoding like the directory
+    sink, and refuses what one piped file cannot carry: splitting,
+    partitioning and clustering."""
+    import io
+
+    import pyarrow as pa
+
+    from odbc2parquet_spark.sinks.parquet_sink import write_parquet_stdout
+
+    df = spark.range(0, 500, 1, 2).selectExpr("id", "cast(id as string) as s")
+    buf = io.BytesIO()
+    write_parquet_stdout(df, SinkOptions(column_encodings={"id": "delta-binary-packed"}), out=buf)
+    rg = pq.ParquetFile(pa.BufferReader(buf.getvalue())).metadata.row_group(0)
+    by_col = {rg.column(i).path_in_schema: rg.column(i) for i in range(2)}
+    assert "DELTA_BINARY_PACKED" in by_col["id"].encodings
+    assert "RLE_DICTIONARY" in by_col["s"].encodings  # untouched column
+    with pytest.raises(ValueError, match="unknown column encodings"):
+        write_parquet_stdout(df, SinkOptions(column_encodings={"id": "bogus"}), out=io.BytesIO())
+    for opts in (
+        SinkOptions(row_groups_per_file=2),
+        SinkOptions(file_size_threshold=1 << 20),
+        SinkOptions(partition_by=("s",)),
+        SinkOptions(cluster_by=("id",)),
+    ):
+        with pytest.raises(ValueError, match="not supported in stdout mode"):
+            write_parquet_stdout(df, opts, out=io.BytesIO())
 
 
 def test_column_encodings_distributed_sink(spark, tmp_path):
@@ -168,13 +185,6 @@ def test_column_encodings_validation(spark, tmp_path):
             str(tmp_path / "z"),
             SinkOptions(single_file=True, column_encodings={"id": "rle"}),
         )
-
-
-def test_stdin_query(engine, monkeypatch):
-    import io
-
-    monkeypatch.setattr("sys.stdin", io.StringIO("SELECT r_regionkey FROM region"))
-    assert engine.query("-").count() == 5
 
 
 def test_zero_column_result_errors(spark):
@@ -259,7 +269,20 @@ def test_cluster_by_disjoint_file_stats(spark, sf_dir, tmp_path):
 
     df = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
     out = str(tmp_path / "clustered")
-    write_parquet(df, out, SinkOptions(cluster_by=("o_orderkey",), cluster_partitions=4))
+    # the range count is the session's: AQE would coalesce these few KB
+    # into one range, so pin four for the write
+    conf = {
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.shuffle.partitions": "4",
+    }
+    saved = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        write_parquet(df, out, SinkOptions(cluster_by=("o_orderkey",)))
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
     ranges = []
     for f in sorted(os.listdir(out)):
         if not f.endswith(".parquet"):
@@ -346,52 +369,6 @@ def test_compression_level_pyarrow_sink_and_validation(spark, tmp_path):
             df,
             str(tmp_path / "bad.par"),
             SinkOptions(compression="gzip", compression_level=5, single_file=True),
-        )
-
-
-def test_time_columns_write_real_parquet_time_type(spark, tmp_path):
-    """B7 nice-to-have from the SURVEY risk register: the pyarrow sink can
-    annotate int-since-midnight columns with a REAL Parquet TIME logical
-    type (reference time.rs:19-78), so external readers see TIME, not
-    bare ints."""
-    import datetime
-
-    df = spark.range(0, 1000, 1, 2).selectExpr(
-        "id",
-        "cast((id * 37) % 86400000 as int) as t_ms",
-        "cast((id * 91) % 86400000000 as long) as t_us",
-    )
-    out = str(tmp_path / "times")
-    files = write_parquet(
-        df, out, SinkOptions(time_columns={"t_ms": "ms", "t_us": "us"})
-    )
-    schema = pq.ParquetFile(files[0]).schema_arrow
-    import pyarrow as pa
-
-    assert schema.field("t_ms").type == pa.time32("ms")
-    assert schema.field("t_us").type == pa.time64("us")
-    assert schema.field("id").type == pa.int64()
-    # values survive: 61_000 ms -> 00:01:01
-    t = pq.read_table(out).to_pylist()
-    by_id = {r["id"]: r for r in t}
-    assert by_id[0]["t_ms"] == datetime.time(0, 0)
-    ms = (123 * 37) % 86400000
-    assert by_id[123]["t_ms"] == datetime.time(
-        ms // 3600000, ms % 3600000 // 60000, ms % 60000 // 1000, ms % 1000 * 1000
-    )
-
-
-def test_time_columns_validation(spark, tmp_path):
-    df = spark.range(5).selectExpr("id", "cast(id as int) as t")
-    with pytest.raises(ValueError, match="units must be ms/us/ns"):
-        write_parquet(df, str(tmp_path / "a"), SinkOptions(time_columns={"t": "sec"}))
-    with pytest.raises(ValueError, match="absent columns"):
-        write_parquet(df, str(tmp_path / "b"), SinkOptions(time_columns={"zzz": "ms"}))
-    with pytest.raises(ValueError, match="directory mode"):
-        write_parquet(
-            df,
-            str(tmp_path / "c.par"),
-            SinkOptions(time_columns={"t": "ms"}, single_file=True),
         )
 
 

@@ -49,10 +49,9 @@ from odbc2parquet_spark.mappings import (
             T.StringType(),
         ),
         (
-            # no-i64 drivers only change the FETCH path (text -> i64,
-            # decimal.rs:86-108); the target type stays int64
-            SourceType("decimal", precision=15, scale=0),
-            MappingOptions(avoid_decimal=True, driver_supports_i64=False),
+            # p=18 is the widest scale-0 decimal that becomes int64
+            SourceType("decimal", precision=18, scale=0),
+            MappingOptions(avoid_decimal=True),
             T.LongType(),
         ),
         (

@@ -1421,6 +1421,26 @@ def test_mp4_sample_table_roundtrip_and_bounds(spark):
     assert rows == {(1, 0), (1, 3), (1, 6), (2, None)}
 
 
+def test_mp4_stsz_count_past_its_box_raises_before_listing(spark):
+    """A corrupt stsz sample count is rejected from the box size alone,
+    before any per-sample list is built, and the payload quarantines."""
+    from odbc2parquet_spark.operators.multimodal import (
+        parse_mp4_samples,
+        synth_mp4_samples,
+        video_frame_index,
+    )
+
+    p = bytearray(synth_mp4_samples(b"abcdef", 600, 500, 3))
+    assert len(p) == 290
+    # box header (size, "stsz"), then version/flags, sample size, count
+    count_at = p.index(b"stsz") + 12
+    p[count_at : count_at + 4] = (2_000_000).to_bytes(4, "big")
+    with pytest.raises(ValueError, match="stsz sample count"):
+        parse_mp4_samples(bytes(p))
+    df = spark.createDataFrame([(7, p)], ["doc_id", "payload"])
+    assert [(r.doc_id, r.sample_idx) for r in video_frame_index(df, 3).collect()] == [(7, None)]
+
+
 def test_span_scrub_removes_later_occurrences_only(spark):
     """A 5-word span pasted into doc 2 is scrubbed there and kept in doc 1;
     unique docs survive untouched; the rebuilt sequence drives the hash."""
