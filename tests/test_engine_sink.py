@@ -187,6 +187,21 @@ def test_column_encodings_validation(spark, tmp_path):
         )
 
 
+def test_stdin_query(sf_dir, tmp_path, capsys, monkeypatch):
+    # "-" reads the statement from stdin; the CLI reads it once, before it
+    # hands the text to Engine.query
+    import io
+    import json
+
+    from odbc2parquet_spark.__main__ import main
+
+    monkeypatch.setattr("sys.stdin", io.StringIO("SELECT r_regionkey FROM region"))
+    out = str(tmp_path / "stdin.par")
+    assert main(["query", "--tables-dir", sf_dir, out, "-"]) == 0
+    assert json.loads(capsys.readouterr().out)["written"] == [out]
+    assert pq.read_table(out).num_rows == 5
+
+
 def test_zero_column_result_errors(spark):
     from unittest import mock
 
