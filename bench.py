@@ -138,7 +138,7 @@ def summary_pin(frozen_bench: dict) -> set[str]:
 
 def reset(spark) -> None:
     """The one between-measurements reset: drop cached relations, release
-    the session's tracked persists and memoized edge list (table plans
+    the session's tracked persists and memoized edge lists (table plans
     stay memoized, see cachereg), and nudge the JVM GC."""
     from odbc2parquet_spark import cachereg
 

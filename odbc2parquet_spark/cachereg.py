@@ -6,11 +6,13 @@ one application's calls never see or drop another's entries:
 * **Memoized values** (:func:`memo`): a value built once per (application,
   key) and reused while the content fingerprint of its source ``path``
   (sorted name, size and mtime_ns of every file under it) is unchanged.
-  Two users: ``catalog.load_table`` memoizes the lazy DataFrame of each
+  Its users: ``catalog.load_table`` memoizes the lazy DataFrame of each
   table (``spark.read.parquet`` pays ~87ms of listing and schema
-  inference per call, and a bench pass calls it several hundred times),
-  and ``queries.similarity._lsh_graph_pairs`` memoizes the checkpointed
-  LSH edge list the graph family shares. A regenerated source directory
+  inference per call, and a bench pass calls it several hundred times);
+  ``queries.similarity._lsh_graph_pairs`` memoizes the checkpointed LSH
+  edge list the graph family shares, and ``_lsh_graph_weighted`` the
+  checkpointed (src, dst, out_deg) list of the same graph that the two
+  PageRank queries walk. A regenerated source directory
   (tools/make_sfbig rewriting ``.sfdata``, even within one second)
   changes the fingerprint, and the rebuilt value replaces the entry in
   place, so the memo is bounded by the number of live keys.
@@ -25,7 +27,8 @@ the results. For the calling application only, it
 
 * unpersists every tracked frame, and
 * drops every memoized value that is itself a tracked frame — the LSH
-  edge list, whose checkpoint blocks the ContextCleaner then reclaims;
+  edge list and its weighted form, whose checkpoint blocks the
+  ContextCleaner then reclaims;
 
 and it keeps the memoized table plans: they pin no executor storage and
 invalidate themselves by fingerprint. ``spark.catalog.clearCache()``

@@ -26,6 +26,17 @@ scheduler round trip when it is materialized. One rule trades the two:
   checkpointed eagerly, because a persist caches blocks but re-embeds the
   edge list's analyzed plan (an LSH or dedup pipeline) at every reference.
 
+The two PageRank walks push rank over an out-degree-weighted edge list
+(src, dst, out_deg), :func:`out_degree_weighted`. A round is one
+groupBy(id) over the union of the contribution rows (dst, rank div
+out_deg) and one row per node carrying its constant term (the teleport
+floor), so no join back to the node or seed list follows the aggregate.
+A caller that runs several walks over one graph passes the weighted list
+itself (``weighted=True``) and owns it: the registry queries read one
+checkpointed list memoized per session next to the LSH pairs
+(``queries.similarity._lsh_graph_weighted``), so its per-src window
+shuffle runs once per session, not once per call.
+
 Every frame the loop materialized except the returned state is released
 on return, and everything is released when a step, the predicate or the
 cap raises. localCheckpoint is the single-session choice; on a cluster,
@@ -36,7 +47,7 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from odbc2parquet_spark.operators.bucketing import release_local_checkpoint
@@ -342,34 +353,62 @@ def canonical_representatives(
     )
 
 
+def out_degree_weighted(
+    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
+) -> DataFrame:
+    """(src, dst, out_deg): every edge with the out-degree of its source,
+    the weighted list :func:`pagerank_int` and
+    :func:`personalized_pagerank_int` push rank over. Every edge counts
+    toward the degree, whatever its endpoints (a per-src window)."""
+    return edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).withColumn(
+        "out_deg", F.count("*").over(Window.partitionBy("src"))
+    )
+
+
 def _rank_walk(
     edges: DataFrame,
     src_col: str,
     dst_col: str,
+    weighted: bool,
     seed: DataFrame,
-    update: Callable[[DataFrame], DataFrame],
+    floor: DataFrame,
+    keep: Column,
     iterations: int,
 ) -> DataFrame:
     """The rank push shared by :func:`pagerank_int` and
-    :func:`personalized_pagerank_int`: each round every node sends
-    ``rank div out_deg`` along its out-edges, ``update`` turns the
-    per-node sums (id, s) into the next (id, rank). The edge list (possibly
-    a whole LSH pipeline upstream) materializes once with its out-degrees
-    attached (per-src window); each round is then one join + one
-    groupBy(dst) shuffle over it."""
-    weighted = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).withColumn("out_deg", F.count("*").over(Window.partitionBy("src")))
+    :func:`personalized_pagerank_int`. Each round is one groupBy(id) over
+    the union of the contribution rows (dst, rank div out_deg) and
+    ``floor``'s (id, f) rows, the constant term of each node that has one;
+    the next rank is ``f + (85 * sum) div 100`` (f = 0 without a floor
+    row) on the groups ``keep`` holds. The weighted list is ``edges`` when
+    ``weighted``, read as is and left to its owner; otherwise it is built
+    here and materialized once for the walk."""
+    terms = floor.select("id", F.lit(0).cast("long").alias("c"), F.col("f").cast("long"))
 
     def step(ranks: DataFrame, weighted: DataFrame) -> DataFrame:
-        return update(
-            weighted.join(ranks, weighted.src == ranks.id)
-            .select(F.col("dst").alias("id"), F.expr("rank div out_deg").alias("c"))
+        pushed = weighted.join(ranks, weighted.src == ranks.id).select(
+            F.col("dst").alias("id"),
+            F.expr("rank div out_deg").alias("c"),
+            F.lit(None).cast("long").alias("f"),
+        )
+        return (
+            pushed.union(terms)
             .groupBy("id")
-            .agg(F.sum("c").alias("s"))
+            .agg(F.sum("c").alias("s"), F.max("f").alias("f"))
+            .select(
+                "id",
+                "f",
+                (F.coalesce("f", F.lit(0)) + F.expr("(85 * s) div 100")).cast("long").alias("rank"),
+            )
+            .filter(keep)
+            .select("id", "rank")
         )
 
-    return _fixpoint(seed, step, iterations, edges=weighted)
+    if weighted:
+        return _fixpoint(seed, lambda ranks: step(ranks, edges), iterations)
+    return _fixpoint(
+        seed, step, iterations, edges=out_degree_weighted(edges, src_col, dst_col)
+    )
 
 
 def pagerank_int(
@@ -379,6 +418,8 @@ def pagerank_int(
     node_col: str = "id",
     src_col: str = "src",
     dst_col: str = "dst",
+    *,
+    weighted: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank in exact integer micro-units
     (rank x 10^12 as int64) — bit-identical on any engine.
@@ -388,25 +429,22 @@ def pagerank_int(
     arithmetic in int64: base rank 10^12 div N, per-edge contribution
     rank div out_degree, update (15*base + 85*sum) div 100. Dangling
     nodes keep their 0.15 floor (their mass leaks, as in the simple
-    formulation — acceptable for a similarity-graph centrality signal).
-    Rounds are fixed (not convergence-tested), so the plan is static and
-    no data is read back between rounds.
+    formulation — acceptable for a similarity-graph centrality signal);
+    mass sent to ids outside ``nodes`` is dropped. Rounds are fixed (not
+    convergence-tested), so the plan is static and no data is read back
+    between rounds.
+
+    ``weighted=True`` declares ``edges`` an :func:`out_degree_weighted`
+    list the caller materialized and releases (``src_col``/``dst_col``
+    are then unused).
     """
     base = (10**12) // nodes.count()
-    floor_term = (15 * base) // 100
     ids = nodes.select(F.col(node_col).alias("id"))
-
-    def update(contrib: DataFrame) -> DataFrame:
-        return ids.join(contrib, "id", "left_outer").select(
-            "id",
-            (
-                F.lit(floor_term)
-                + F.expr("(85 * coalesce(s, 0)) div 100")
-            ).cast("long").alias("rank"),
-        )
-
+    floor = ids.select("id", F.lit((15 * base) // 100).alias("f"))
     seed = ids.select("id", F.lit(base).alias("rank"))
-    return _rank_walk(edges, src_col, dst_col, seed, update, iterations)
+    return _rank_walk(
+        edges, src_col, dst_col, weighted, seed, floor, F.col("f").isNotNull(), iterations
+    )
 
 
 def personalized_pagerank_int(
@@ -416,6 +454,8 @@ def personalized_pagerank_int(
     node_col: str = "id",
     src_col: str = "src",
     dst_col: str = "dst",
+    *,
+    weighted: bool = False,
 ) -> DataFrame:
     """Personalized PageRank (random walk with restart to a SEED set) in
     exact integer micro-units — the "more like these" expansion primitive:
@@ -428,33 +468,18 @@ def personalized_pagerank_int(
     10^12 div n_seeds; rank_0 = base on seeds else 0; update(v) =
     (15*base div 100 if v is seed else 0) + (85 * sum over in-edges of
     rank div out_deg) div 100. Nodes the walk never reaches stay at
-    exactly 0, so the result is naturally sparse — at 100 TB the rank
-    frontier (not the corpus) is what each iteration shuffles, and the
-    per-iteration cost tracks the seed neighborhood size.
+    exactly 0 and are left out, so the result is naturally sparse — at
+    100 TB the rank frontier (not the corpus) is what each iteration
+    shuffles, and the per-iteration cost tracks the seed neighborhood
+    size. ``weighted`` is as in :func:`pagerank_int`.
     """
     base = (10**12) // seeds.count()
-    floor_term = (15 * base) // 100
     seed_ids = seeds.select(F.col(node_col).alias("id")).distinct()
-
-    # full outer of (teleport floor on seeds) and (walk mass): only rows
-    # touched by either term exist — the frontier stays sparse instead of
-    # densifying to every node in the graph.
-    def update(contrib: DataFrame) -> DataFrame:
-        return (
-            seed_ids.select("id", F.lit(floor_term).alias("f"))
-            .join(contrib, "id", "full_outer")
-            .select(
-                "id",
-                (
-                    F.coalesce(F.col("f"), F.lit(0))
-                    + F.expr("(85 * coalesce(s, 0)) div 100")
-                ).cast("long").alias("rank"),
-            )
-            .filter(F.col("rank") > 0)
-        )
-
+    floor = seed_ids.select("id", F.lit((15 * base) // 100).alias("f"))
     seed = seed_ids.select("id", F.lit(base).cast("long").alias("rank"))
-    return _rank_walk(edges, src_col, dst_col, seed, update, iterations)
+    return _rank_walk(
+        edges, src_col, dst_col, weighted, seed, floor, F.col("rank") > 0, iterations
+    )
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:

@@ -817,22 +817,44 @@ def dhash_near_pairs(
     )
 
 
+def _png_predict(ft: int, a: int, b: int, c: int) -> int:
+    """The prediction of PNG filter type ``ft`` (1 Sub, 2 Up, 3 Average,
+    4 Paeth) for a byte from its left (``a``), upper (``b``) and
+    upper-left (``c``) neighbours."""
+    if ft == 1:
+        return a
+    if ft == 2:
+        return b
+    if ft == 3:
+        return (a + b) >> 1
+    p = a + b - c
+    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+    return a if pa <= pb and pa <= pc else b if pb <= pc else c
+
+
 def synth_png(
     pixel_source: bytes, width: int, height: int, filter_type: int = 0
 ) -> bytes:
     """Construct a VALID 8-bit RGB PNG: signature, IHDR, one zlib IDAT,
     IEND — correct CRCs throughout, decodable by any viewer. Pixel bytes
-    cycle ``pixel_source`` in scanline order; ``filter_type`` 0 (None)
-    or 1 (Sub) exercises the decoder's unfilter path."""
+    cycle ``pixel_source`` in scanline order; every scanline carries
+    ``filter_type`` (0 None, 1 Sub, 2 Up, 3 Average, 4 Paeth), so each of
+    the decoder's unfilter paths can be exercised."""
     row_bytes = width * 3
     raw = _cycle(pixel_source, row_bytes * height)
+    if filter_type not in range(5):
+        raise ValueError(f"unknown PNG filter type {filter_type}")
     lines = []
+    prev = bytes(row_bytes)
     for r in range(height):
-        line = bytearray(raw[r * row_bytes : (r + 1) * row_bytes])
-        if filter_type == 1:  # Sub: delta vs the pixel 3 bytes left
-            for i in range(row_bytes - 1, 2, -1):
-                line[i] = (line[i] - line[i - 3]) & 0xFF
-        lines.append(bytes([filter_type]) + bytes(line))
+        line = raw[r * row_bytes : (r + 1) * row_bytes]
+        out = bytearray([filter_type]) + line
+        if filter_type:
+            for i in range(row_bytes):
+                a, c = (line[i - 3], prev[i - 3]) if i >= 3 else (0, 0)
+                out[i + 1] = (line[i] - _png_predict(filter_type, a, prev[i], c)) & 0xFF
+        lines.append(bytes(out))
+        prev = line
     idat = zlib.compress(b"".join(lines))
 
     def chunk(kind: bytes, body: bytes) -> bytes:
@@ -855,41 +877,32 @@ def synth_png(
 def _png_unfilter(raw: bytes, width: int, height: int):
     """Reverse PNG scanline filtering (types 0-4) for 8-bit RGB.
 
-    Returns an (h, w, 3) uint8 array. Pure numpy + the spec's Paeth
-    predictor — no imaging library."""
+    Returns an (h, w, 3) uint8 array. None and Up are one numpy add, Sub
+    a per-channel cumulative sum mod 256; Average and Paeth depend on the
+    byte just decoded, so they loop over Python ints (not numpy scalars).
+    No imaging library."""
     row_bytes = width * 3
-    out = np.zeros((height, row_bytes), dtype=np.uint8)
-    pos = 0
-    for r in range(height):
-        ft = raw[pos]
-        pos += 1
-        line = np.frombuffer(raw[pos : pos + row_bytes], np.uint8).astype(np.int32)
-        pos += row_bytes
-        prev = out[r - 1].astype(np.int32) if r > 0 else np.zeros(row_bytes, np.int32)
-        cur = np.zeros(row_bytes, dtype=np.int32)
+    out = np.zeros((height + 1, row_bytes), dtype=np.uint8)  # row 0: the zero row above
+    for r in range(1, height + 1):
+        start = (r - 1) * (row_bytes + 1)
+        ft = raw[start]
+        line = np.frombuffer(raw, np.uint8, row_bytes, start + 1)
         if ft == 0:
-            cur = line
-        elif ft == 2:  # Up
-            cur = (line + prev) & 0xFF
-        elif ft in (1, 3, 4):  # Sub / Average / Paeth need a left-scan
+            out[r] = line
+        elif ft == 1:  # Sub
+            out[r] = line.reshape(width, 3).cumsum(axis=0).reshape(-1) & 0xFF
+        elif ft == 2:  # Up (uint8 addition wraps mod 256)
+            out[r] = line + out[r - 1]
+        elif ft in (3, 4):  # Average / Paeth
+            cur = bytearray(line.tobytes())
+            prev = out[r - 1].tobytes()
             for i in range(row_bytes):
-                a = cur[i - 3] if i >= 3 else 0
-                b = prev[i]
-                if ft == 1:
-                    v = line[i] + a
-                elif ft == 3:
-                    v = line[i] + (a + b) // 2
-                else:
-                    c = prev[i - 3] if i >= 3 else 0
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                    v = line[i] + pred
-                cur[i] = v & 0xFF
+                a, c = (cur[i - 3], prev[i - 3]) if i >= 3 else (0, 0)
+                cur[i] = (cur[i] + _png_predict(ft, a, prev[i], c)) & 0xFF
+            out[r] = np.frombuffer(cur, np.uint8)
         else:
             raise ValueError(f"unknown PNG filter type {ft}")
-        out[r] = cur.astype(np.uint8)
-    return out.reshape(height, width, 3)
+    return out[1:].reshape(height, width, 3)
 
 
 def decode_png_pixels(binary_df: DataFrame) -> DataFrame:

@@ -20,11 +20,22 @@ _N_PLANES = 16
 _DIM = 64
 
 
+def _graph_memo(spark: SparkSession, name: str, sf_dir: str, build) -> DataFrame:
+    """``build()`` eagerly checkpointed, tracked (``cachereg.release``
+    drops it) and memoized in :mod:`cachereg` per (application, ``name``,
+    sf_dir) until the embeddings file changes."""
+
+    def checkpointed() -> DataFrame:
+        return cachereg.track(build().localCheckpoint(eager=True))
+
+    path = table_path(sf_dir, "embeddings")
+    return cachereg.memo(spark, (name, sf_dir), path, checkpointed)
+
+
 def _lsh_graph_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical (id_a < id_b) LSH bucket pairs over ``embeddings`` at the
     graph family's frozen operating point (16 planes, prefix_bits=8),
-    eagerly checkpointed and memoized in :mod:`cachereg` per (application,
-    sf_dir) until the embeddings file changes.
+    through :func:`_graph_memo`.
 
     One edge list is shared by the graph family (PageRank, PPR, HITS, LPA,
     clustering coeff): a real pipeline builds the similarity graph ONCE
@@ -34,17 +45,14 @@ def _lsh_graph_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators need the edge list's LOGICAL plan truncated — a lazy
     persist caches blocks but re-embeds the full LSH plan at every
     per-round reference, and Catalyst re-analysis then dominates wall time
-    (measured 2-2.5x on sim_hits/sim_lpa_communities). The frame is
-    tracked, so ``cachereg.release`` drops it."""
+    (measured 2-2.5x on sim_hits/sim_lpa_communities)."""
 
     def build() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
         sig = S.lsh_signatures(emb, _N_PLANES, _DIM)
-        pairs = S.lsh_bucket_pairs(sig, prefix_bits=8).select("id_a", "id_b")
-        return cachereg.track(pairs.localCheckpoint(eager=True))
+        return S.lsh_bucket_pairs(sig, prefix_bits=8).select("id_a", "id_b")
 
-    path = table_path(sf_dir, "embeddings")
-    return cachereg.memo(spark, ("lsh_graph_pairs", sf_dir), path, build)
+    return _graph_memo(spark, "lsh_graph_pairs", sf_dir, build)
 
 
 def _lsh_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -53,6 +61,21 @@ def _lsh_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _lsh_graph_pairs(spark, sf_dir)
     return pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).union(
         pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+    )
+
+
+def _lsh_graph_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The :func:`_lsh_graph_edges` graph as the (src, dst, out_deg) list
+    of ``graph.out_degree_weighted``, through :func:`_graph_memo`: the
+    PageRank walks read it every round, and its per-src window shuffle
+    then runs once per session instead of once per call."""
+    from odbc2parquet_spark.operators.graph import out_degree_weighted
+
+    return _graph_memo(
+        spark,
+        "lsh_graph_weighted",
+        sf_dir,
+        lambda: out_degree_weighted(_lsh_graph_edges(spark, sf_dir)),
     )
 
 
@@ -1190,9 +1213,9 @@ def sim_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.graph import pagerank_int
 
     emb = load_table(spark, sf_dir, "embeddings")
-    sym = _lsh_graph_edges(spark, sf_dir)
+    weighted = _lsh_graph_weighted(spark, sf_dir)
     nodes = emb.select(F.col("vec_id").alias("id"))
-    return pagerank_int(nodes, sym, iterations=3)
+    return pagerank_int(nodes, weighted, iterations=3, weighted=True)
 
 
 def _ppr_iter_sql(i: int) -> str:
@@ -1230,11 +1253,11 @@ def sim_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.graph import personalized_pagerank_int
 
     emb = load_table(spark, sf_dir, "embeddings")
-    sym = _lsh_graph_edges(spark, sf_dir)
+    weighted = _lsh_graph_weighted(spark, sf_dir)
     seeds = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("id")
     )
-    return personalized_pagerank_int(sym, seeds, iterations=3)
+    return personalized_pagerank_int(weighted, seeds, iterations=3, weighted=True)
 
 
 @query(

@@ -45,6 +45,20 @@ driver's JVM options and its memory (which decides compressed oops).
   JVM was started outside this process.
 
 ``CDS`` records the path the last launch took; ``-v`` prints it.
+
+Python workers
+--------------
+``session_conf`` sets ``spark.python.daemon.module`` to
+:mod:`odbc2parquet_spark.worker_daemon`, which forks Python workers like
+``pyspark.daemon`` does. Every Python task calls
+``importlib.invalidate_caches()``, and on Python 3.12 and older that makes
+each cached zip importer re-read its archive's directory: ~0.27 s a task
+here, spent re-reading ``pyspark.zip`` and the spark-core jar. The
+package daemon re-reads an archive only when its inode, size or mtime
+changed. It is set only when a worker can import the package (from the
+working directory, ``$PYTHONPATH`` or a site directory): a worker's path
+is not this process's ``sys.path``. The daemon conf is no JVM option, so
+the archive key does not move.
 """
 
 from __future__ import annotations
@@ -56,6 +70,7 @@ import hashlib
 import os
 import re
 import shutil
+import site
 import subprocess
 from dataclasses import dataclass
 
@@ -85,6 +100,20 @@ class Cds:
 
 #: what the driver JVM of this process was started with; None before then
 CDS: Cds | None = None
+
+
+#: the Python worker daemon (see "Python workers" above)
+WORKER_DAEMON = "odbc2parquet_spark.worker_daemon"
+
+
+def workers_import_package(env=os.environ) -> bool:
+    """Whether a Python worker started from this process can import the
+    package: workers run in its working directory with ``$PYTHONPATH``
+    and the site directories on their path."""
+    root = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+    paths = [os.getcwd(), *env.get("PYTHONPATH", "").split(os.pathsep)]
+    paths += [*site.getsitepackages(), site.getusersitepackages()]
+    return any(p and os.path.realpath(p) == root for p in paths)
 
 
 def local_cpus(env=os.environ) -> str:
@@ -323,6 +352,8 @@ def session_conf(master: str | None = None, env=os.environ) -> tuple[str, dict[s
         # bounded: cached entries are generated classes, not data.
         "spark.sql.codegen.cache.maxEntries": "2000",
     }
+    if workers_import_package(env):
+        conf["spark.python.daemon.module"] = WORKER_DAEMON
     cpus = local_cpus(env)
     if master is None:
         master = f"local[{cpus}]"

@@ -63,12 +63,23 @@ COLUMN_ENCODINGS = {
 #: sink), pyarrow's ParquetWriter through ``compression_level``
 _LEVEL_CODECS = {"spark": {"zstd"}, "arrow": {"zstd", "gzip", "brotli"}}
 
-#: options each output mode cannot honour: hive partitioning, range
-#: clustering and the pyarrow encodings sink write one file per task
-#: (directory mode); stdout carries exactly one file
+#: output mode -> (options it cannot honour, why)
 _MODE_REJECTS = {
-    "file": ("partition_by", "cluster_by", "column_encodings"),
-    "stdout": ("row_groups_per_file", "file_size_threshold", "partition_by", "cluster_by"),
+    "file": (
+        ("partition_by", "cluster_by", "column_encodings"),
+        "hive partitioning, range clustering and the pyarrow encodings sink "
+        "write one file per task, so they require directory mode",
+    ),
+    "stdout": (
+        ("row_groups_per_file", "file_size_threshold", "partition_by", "cluster_by"),
+        "stdout carries exactly one file, so it takes no splitting or "
+        "partitioning flags",
+    ),
+    "column_encodings": (
+        ("partition_by",),
+        "the pyarrow encodings sink writes one flat file per task, with no "
+        "partition directories",
+    ),
 }
 
 
@@ -96,8 +107,9 @@ class SinkOptions:
     #: distributed pyarrow sink (one file per task via mapInArrow — still
     #: no driver materialization); stdout's writer is pyarrow already.
     column_encodings: dict[str, str] | None = None
-    #: hive-style directory partitioning (directory mode only) — at 100 TB
-    #: this is what makes downstream partition pruning possible.
+    #: hive-style directory partitioning (directory mode only, and not
+    #: with ``column_encodings``) — at 100 TB this is what makes
+    #: downstream partition pruning possible.
     partition_by: tuple[str, ...] = ()
     #: range-cluster the output on these columns: repartitionByRange +
     #: sortWithinPartitions so each file/row-group carries a DISJOINT
@@ -109,13 +121,10 @@ class SinkOptions:
 
 def _check_mode(opts: SinkOptions, mode: str) -> None:
     """Raise when ``opts`` sets an option the output ``mode`` cannot honour."""
-    rejected = [name for name in _MODE_REJECTS[mode] if getattr(opts, name)]
+    names, why = _MODE_REJECTS[mode]
+    rejected = [name for name in names if getattr(opts, name)]
     if rejected:
-        raise ValueError(
-            f"{', '.join(rejected)} not supported in {mode} mode (partition_by, "
-            f"cluster_by and column_encodings require directory mode; stdout "
-            f"writes one file, so it takes no splitting flags)"
-        )
+        raise ValueError(f"{', '.join(rejected)} not supported in {mode} mode: {why}")
 
 
 def _compression_level(opts: SinkOptions, writer: str) -> int | None:
@@ -386,6 +395,8 @@ def write_parquet(
             # the reference treats a directory output path as an error
             # (tests/integration.rs:181).
             raise ValueError(f"output path {path!r} is an existing directory")
+    if opts.column_encodings:
+        _check_mode(opts, "column_encodings")
 
     if opts.no_empty_file and df.isEmpty():
         return []

@@ -72,6 +72,23 @@ def test_cli_tables_dir_registers_every_parquet_file(spark, tmp_path, capsys):
     assert pq.read_table(out).to_pylist() == [{"total": 42, "n": 3}]
 
 
+def test_cli_column_encodings_with_partition_by_is_rejected(spark, sf_dir, tmp_path):
+    """The per-column encodings sink writes flat files, so asking for hive
+    partitioning as well is an error before anything is written, not a
+    directory without its partitions."""
+    import pytest
+
+    out = str(tmp_path / "nation")
+    with pytest.raises(ValueError, match="partition_by not supported in column_encodings mode"):
+        main(
+            ["query", "--tables-dir", sf_dir,
+             "--parquet-column-encoding", "n_nationkey:plain",
+             "--partition-by", "n_regionkey",
+             out, "SELECT n_nationkey, n_regionkey FROM nation"]
+        )
+    assert not os.path.exists(out)
+
+
 def test_every_query_option_is_set_by_the_cli_and_read():
     """No dead option: each field of SinkOptions and MappingOptions is a
     keyword where __main__.py builds that object, and some module of the

@@ -1838,34 +1838,54 @@ def test_hash_embed_long_doc_cross_engine_hash(spark):
 
 
 def test_png_decode_all_filter_types_and_corrupt(spark):
-    """The unfilter path must handle Sub/Up-filtered scanlines (a viewer-
-    grade decoder, not just our own filter-0 output); bad CRC and
-    non-PNG payloads quarantine."""
+    """The unfilter path must handle all five scanline filters (None,
+    Sub, Up, Average, Paeth: a viewer-grade decoder, not just our own
+    filter-0 output); bad CRC and non-PNG payloads quarantine."""
     from odbc2parquet_spark.operators.multimodal import (
         decode_png_pixels, synth_png,
     )
 
-    src = bytes(range(1, 40))
-    png0 = synth_png(src, 5, 4, filter_type=0)
-    png1 = synth_png(src, 5, 4, filter_type=1)
-    corrupt = bytearray(png0)
+    # 7 pixels wide: Average and Paeth see left, upper and upper-left
+    # neighbours beyond the first pixel of a row
+    src = bytes((i * 37 + 11) % 256 for i in range(1, 200))
+    pngs = {ft: synth_png(src, 7, 5, filter_type=ft) for ft in range(5)}
+    assert len({p for p in pngs.values()}) == 5  # five different encodings
+    corrupt = bytearray(pngs[0])
     corrupt[20] ^= 0xFF  # break IHDR CRC
     df = spark.createDataFrame(
-        [
-            (1, bytearray(png0)),
-            (2, bytearray(png1)),
-            (3, bytearray(b"not a png")),
-            (4, corrupt),
-        ],
+        [(ft, bytearray(p)) for ft, p in pngs.items()]
+        + [(5, bytearray(b"not a png")), (6, corrupt)],
         ["doc_id", "payload"],
     )
     rows = {r.doc_id: r for r in decode_png_pixels(df).collect()}
     # identical pixels regardless of the filter used at encode time
-    assert (rows[1].sum_r, rows[1].sum_g, rows[1].sum_b) == (
-        rows[2].sum_r, rows[2].sum_g, rows[2].sum_b,
-    )
-    assert rows[1].n_pixels == 20 and rows[1].sum_r is not None
-    assert rows[3].width is None and rows[4].width is None
+    want = tuple(sum(src[c::3][:35]) for c in range(3))  # R, G, B over 7x5 pixels
+    for ft in range(5):
+        assert (rows[ft].sum_r, rows[ft].sum_g, rows[ft].sum_b) == want, ft
+        assert rows[ft].n_pixels == 35
+    assert rows[5].width is None and rows[6].width is None
+
+
+def test_png_unfilter_inverts_every_filter():
+    """Pixel for pixel, without Spark: each filter type synth_png writes
+    decodes back to the source bytes (a width past one pixel and rows
+    past the first give every predictor its three neighbours)."""
+    import zlib
+
+    import numpy as np
+
+    from odbc2parquet_spark.operators.multimodal import _png_unfilter, synth_png
+
+    w, h = 37, 9
+    src = bytes((i * 101 + 7) % 256 for i in range(w * h * 3))
+    want = np.frombuffer(src, np.uint8).reshape(h, w, 3)
+    for ft in range(5):
+        png = synth_png(src, w, h, filter_type=ft)
+        # one IDAT after the 8-byte signature and the 25-byte IHDR chunk
+        n = int.from_bytes(png[33:37], "big")
+        raw = zlib.decompress(png[41 : 41 + n])
+        assert raw[0] == ft
+        assert (_png_unfilter(raw, w, h) == want).all(), ft
 
 
 def test_bpe_learn_batched_batch1_equals_sequential(spark):

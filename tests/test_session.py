@@ -245,3 +245,69 @@ def test_cds_no_archive_state_fails_a_session(cli_runs, case):
     assert len(published) == 1 and published[0].startswith(key + "."), published
     assert os.path.getsize(os.path.join(cache, published[0])) == int(published[0].split(".")[1]) > 0
     assert not any(n.endswith(".part") for n in os.listdir(cache))
+
+
+def test_worker_daemon_only_where_workers_import_the_package(tmp_path, monkeypatch):
+    key = "spark.python.daemon.module"
+    monkeypatch.chdir(tmp_path)
+    assert not session.workers_import_package({})
+    assert key not in session.session_conf(env={})[1]
+    env = {"PYTHONPATH": os.pathsep.join([str(tmp_path), REPO])}
+    assert session.session_conf(env=env)[1][key] == "odbc2parquet_spark.worker_daemon"
+    monkeypatch.chdir(REPO)
+    assert session.workers_import_package({})
+
+
+def test_worker_daemon_rereads_only_a_changed_archive(tmp_path, monkeypatch):
+    """Without Spark: an unchanged archive keeps its directory object
+    through ``invalidate_caches``; a rewritten one is re-read, and a
+    second importer of it adopts the new directory."""
+    import zipfile
+    import zipimport
+
+    from odbc2parquet_spark import worker_daemon
+
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches", worker_daemon.invalidate_if_changed
+    )
+    path = str(tmp_path / "lib.zip")
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr("pkg/__init__.py", "")
+        z.writestr("a.py", "x = 1\n")
+    imp, sub = zipimport.zipimporter(path), zipimport.zipimporter(os.path.join(path, "pkg"))
+    imp.invalidate_caches()  # the first call reads and stamps
+    files = zipimport._zip_directory_cache[path]
+    for _ in range(3):
+        imp.invalidate_caches()
+        sub.invalidate_caches()
+    assert zipimport._zip_directory_cache[path] is files
+    assert imp._files is files and sub._files is files
+    with zipfile.ZipFile(path, "w") as z:  # same inode, new size and mtime
+        z.writestr("pkg/__init__.py", "")
+        z.writestr("a.py", "x = 1\n")
+        z.writestr("b.py", "y = 2\n")
+    imp.invalidate_caches()
+    reread = zipimport._zip_directory_cache[path]
+    assert reread is not files and "b.py" in reread
+    sub.invalidate_caches()
+    assert sub._files is reread
+    assert imp.find_spec("b") is not None
+
+
+def test_python_tasks_run_under_the_package_daemon(spark):
+    """A Python task is forked by the package daemon, and the per-task
+    ``importlib.invalidate_caches()`` leaves pyspark.zip's directory, the
+    one every pyspark import reads, as it was."""
+
+    def probe(_):
+        import importlib
+        import zipimport
+
+        main = sys.modules["__main__"].__spec__
+        archive = next(a for a in zipimport._zip_directory_cache if a.endswith("pyspark.zip"))
+        before = zipimport._zip_directory_cache[archive]
+        importlib.invalidate_caches()
+        yield main and main.name, zipimport._zip_directory_cache[archive] is before
+
+    got = spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()
+    assert got == [("odbc2parquet_spark.worker_daemon", True)]

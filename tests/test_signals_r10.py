@@ -850,6 +850,30 @@ def test_fixed_round_fixpoints_sql_executions(spark):
     }
 
 
+def test_warm_sim_pagerank_runs_at_most_13_jobs(spark, sf_dir):
+    """A warm sim_pagerank (its weighted graph memoized by the cold call)
+    pays the node count, the three rounds and the write, counted by job
+    group. Each round is one groupBy over contributions and floor rows
+    read from the memoized (src, dst, out_deg) list; with a join back to
+    the node list per round and the out-degree window rebuilt per call
+    the same pass ran 19 jobs."""
+    from odbc2parquet_spark.queries import QUERIES
+
+    def run():
+        QUERIES["sim_pagerank"](spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    sc = spark.sparkContext
+    run()  # cold: builds and memoizes the LSH graph
+    sc.setJobGroup("warm_sim_pagerank", "warm sim_pagerank")
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("warm_sim_pagerank")
+    assert 0 < len(jobs) <= 13, len(jobs)
+
+
 def test_value_anomalies_constant_group_no_nan_rows(spark):
     # a constant-valued group cancels s2 - s1^2/n to +-epsilon; the
     # GREATEST clamp must pin sd to 0 (filtered) instead of Spark's NaN
