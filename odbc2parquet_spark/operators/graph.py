@@ -26,16 +26,15 @@ scheduler round trip when it is materialized. One rule trades the two:
   checkpointed eagerly, because a persist caches blocks but re-embeds the
   edge list's analyzed plan (an LSH or dedup pipeline) at every reference.
 
-The two PageRank walks push rank over an out-degree-weighted edge list
-(src, dst, out_deg), :func:`out_degree_weighted`. A round is one
+The two PageRank walks take an out-degree-weighted edge list
+(src, dst, out_deg), built by :func:`out_degree_weighted`, and read it as
+is every round; its owner materializes and releases it. A round is one
 groupBy(id) over the union of the contribution rows (dst, rank div
 out_deg) and one row per node carrying its constant term (the teleport
 floor), so no join back to the node or seed list follows the aggregate.
-A caller that runs several walks over one graph passes the weighted list
-itself (``weighted=True``) and owns it: the registry queries read one
-checkpointed list memoized per session next to the LSH pairs
-(``queries.similarity._lsh_graph_weighted``), so its per-src window
-shuffle runs once per session, not once per call.
+The registry queries pass one checkpointed list memoized per session
+next to the LSH pairs (``queries.similarity._lsh_graph_weighted``), so
+its per-src window shuffle runs once per session, not once per call.
 
 Every frame the loop materialized except the returned state is released
 on return, and everything is released when a step, the predicate or the
@@ -359,17 +358,16 @@ def out_degree_weighted(
     """(src, dst, out_deg): every edge with the out-degree of its source,
     the weighted list :func:`pagerank_int` and
     :func:`personalized_pagerank_int` push rank over. Every edge counts
-    toward the degree, whatever its endpoints (a per-src window)."""
+    toward the degree, whatever its endpoints (a per-src window). The
+    result is lazy; a caller that runs several walks over it pins it
+    (``localCheckpoint()``) and releases it."""
     return edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).withColumn(
         "out_deg", F.count("*").over(Window.partitionBy("src"))
     )
 
 
 def _rank_walk(
-    edges: DataFrame,
-    src_col: str,
-    dst_col: str,
-    weighted: bool,
+    weighted: DataFrame,
     seed: DataFrame,
     floor: DataFrame,
     keep: Column,
@@ -380,12 +378,10 @@ def _rank_walk(
     the union of the contribution rows (dst, rank div out_deg) and
     ``floor``'s (id, f) rows, the constant term of each node that has one;
     the next rank is ``f + (85 * sum) div 100`` (f = 0 without a floor
-    row) on the groups ``keep`` holds. The weighted list is ``edges`` when
-    ``weighted``, read as is and left to its owner; otherwise it is built
-    here and materialized once for the walk."""
+    row) on the groups ``keep`` holds."""
     terms = floor.select("id", F.lit(0).cast("long").alias("c"), F.col("f").cast("long"))
 
-    def step(ranks: DataFrame, weighted: DataFrame) -> DataFrame:
+    def step(ranks: DataFrame) -> DataFrame:
         pushed = weighted.join(ranks, weighted.src == ranks.id).select(
             F.col("dst").alias("id"),
             F.expr("rank div out_deg").alias("c"),
@@ -404,22 +400,14 @@ def _rank_walk(
             .select("id", "rank")
         )
 
-    if weighted:
-        return _fixpoint(seed, lambda ranks: step(ranks, edges), iterations)
-    return _fixpoint(
-        seed, step, iterations, edges=out_degree_weighted(edges, src_col, dst_col)
-    )
+    return _fixpoint(seed, step, iterations)
 
 
 def pagerank_int(
     nodes: DataFrame,
-    edges: DataFrame,
+    weighted: DataFrame,
     iterations: int = 3,
     node_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    *,
-    weighted: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank in exact integer micro-units
     (rank x 10^12 as int64) — bit-identical on any engine.
@@ -434,28 +422,20 @@ def pagerank_int(
     convergence-tested), so the plan is static and no data is read back
     between rounds.
 
-    ``weighted=True`` declares ``edges`` an :func:`out_degree_weighted`
-    list the caller materialized and releases (``src_col``/``dst_col``
-    are then unused).
+    ``weighted`` is the graph as an :func:`out_degree_weighted` list.
     """
     base = (10**12) // nodes.count()
     ids = nodes.select(F.col(node_col).alias("id"))
     floor = ids.select("id", F.lit((15 * base) // 100).alias("f"))
     seed = ids.select("id", F.lit(base).alias("rank"))
-    return _rank_walk(
-        edges, src_col, dst_col, weighted, seed, floor, F.col("f").isNotNull(), iterations
-    )
+    return _rank_walk(weighted, seed, floor, F.col("f").isNotNull(), iterations)
 
 
 def personalized_pagerank_int(
-    edges: DataFrame,
+    weighted: DataFrame,
     seeds: DataFrame,
     iterations: int = 3,
     node_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    *,
-    weighted: bool = False,
 ) -> DataFrame:
     """Personalized PageRank (random walk with restart to a SEED set) in
     exact integer micro-units — the "more like these" expansion primitive:
@@ -477,9 +457,7 @@ def personalized_pagerank_int(
     seed_ids = seeds.select(F.col(node_col).alias("id")).distinct()
     floor = seed_ids.select("id", F.lit((15 * base) // 100).alias("f"))
     seed = seed_ids.select("id", F.lit(base).cast("long").alias("rank"))
-    return _rank_walk(
-        edges, src_col, dst_col, weighted, seed, floor, F.col("rank") > 0, iterations
-    )
+    return _rank_walk(weighted, seed, floor, F.col("rank") > 0, iterations)
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:

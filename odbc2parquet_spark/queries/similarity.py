@@ -1215,7 +1215,7 @@ def sim_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     weighted = _lsh_graph_weighted(spark, sf_dir)
     nodes = emb.select(F.col("vec_id").alias("id"))
-    return pagerank_int(nodes, weighted, iterations=3, weighted=True)
+    return pagerank_int(nodes, weighted, iterations=3)
 
 
 def _ppr_iter_sql(i: int) -> str:
@@ -1257,7 +1257,7 @@ def sim_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("id")
     )
-    return personalized_pagerank_int(weighted, seeds, iterations=3, weighted=True)
+    return personalized_pagerank_int(weighted, seeds, iterations=3)
 
 
 @query(

@@ -53,12 +53,13 @@ Python workers
 ``pyspark.daemon`` does. Every Python task calls
 ``importlib.invalidate_caches()``, and on Python 3.12 and older that makes
 each cached zip importer re-read its archive's directory: ~0.27 s a task
-here, spent re-reading ``pyspark.zip`` and the spark-core jar. The
-package daemon re-reads an archive only when its inode, size or mtime
-changed. It is set only when a worker can import the package (from the
-working directory, ``$PYTHONPATH`` or a site directory): a worker's path
-is not this process's ``sys.path``. The daemon conf is no JVM option, so
-the archive key does not move.
+on a 4-core local[4] session, spent re-reading ``pyspark.zip`` and the
+spark-core jar. The package daemon re-reads an archive only when its
+inode, size or mtime changed. It is set only for a local master, and only
+when a worker can import the package (from the working directory,
+``$PYTHONPATH`` or a site directory): a worker's path is not this
+process's ``sys.path``, and a cluster's executors share neither. The
+daemon conf is no JVM option, so the archive key does not move.
 """
 
 from __future__ import annotations
@@ -352,14 +353,15 @@ def session_conf(master: str | None = None, env=os.environ) -> tuple[str, dict[s
         # bounded: cached entries are generated classes, not data.
         "spark.sql.codegen.cache.maxEntries": "2000",
     }
-    if workers_import_package(env):
-        conf["spark.python.daemon.module"] = WORKER_DAEMON
     cpus = local_cpus(env)
     if master is None:
         master = f"local[{cpus}]"
     if master.startswith("local"):
         conf["spark.sql.shuffle.partitions"] = cpus
         conf["spark.driver.memory"] = env.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+        # local workers share the driver's working directory and path
+        if workers_import_package(env):
+            conf["spark.python.daemon.module"] = WORKER_DAEMON
     return master, conf
 
 

@@ -279,9 +279,11 @@ _FIXPOINT_RUNS = {
         nodes, pairs
     ),
     "k_core": lambda nodes, edges, pairs: graph.k_core(pairs, 1),
-    "pagerank_int": lambda nodes, edges, pairs: graph.pagerank_int(nodes, edges, iterations=5),
+    "pagerank_int": lambda nodes, edges, pairs: graph.pagerank_int(
+        nodes, graph.out_degree_weighted(edges), iterations=5
+    ),
     "personalized_pagerank_int": lambda nodes, edges, pairs: graph.personalized_pagerank_int(
-        edges, nodes.filter(F.col("id") % 5 == 0), iterations=5
+        graph.out_degree_weighted(edges), nodes.filter(F.col("id") % 5 == 0), iterations=5
     ),
     "hits_int": lambda nodes, edges, pairs: graph.hits_int(nodes, edges, rounds=5),
     "label_propagation_int": lambda nodes, edges, pairs: graph.label_propagation_int(

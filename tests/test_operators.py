@@ -859,14 +859,15 @@ def test_knn_graph_ranks_and_symmetry(spark):
 
 
 def test_pagerank_int_mass_and_ordering(spark):
-    from odbc2parquet_spark.operators.graph import pagerank_int
+    from odbc2parquet_spark.operators.graph import out_degree_weighted, pagerank_int
 
     # star graph: hub 0 connected to 1,2,3 (symmetric edges)
     nodes = spark.createDataFrame([(i,) for i in range(4)], ["id"])
     edges = spark.createDataFrame(
         [(0, 1), (1, 0), (0, 2), (2, 0), (0, 3), (3, 0)], ["src", "dst"]
     )
-    got = {r["id"]: r["rank"] for r in pagerank_int(nodes, edges, iterations=3).collect()}
+    ranks = pagerank_int(nodes, out_degree_weighted(edges), iterations=3)
+    got = {r["id"]: r["rank"] for r in ranks.collect()}
     # the hub must outrank every leaf; leaves are symmetric -> equal ranks
     assert got[0] > got[1]
     assert got[1] == got[2] == got[3]
@@ -876,7 +877,10 @@ def test_pagerank_int_mass_and_ordering(spark):
 
 
 def test_personalized_pagerank_frontier_and_floor(spark):
-    from odbc2parquet_spark.operators.graph import personalized_pagerank_int
+    from odbc2parquet_spark.operators.graph import (
+        out_degree_weighted,
+        personalized_pagerank_int,
+    )
 
     # path graph 0-1-2-3-4 (symmetric); seed only at node 0
     edges = spark.createDataFrame(
@@ -887,7 +891,9 @@ def test_personalized_pagerank_frontier_and_floor(spark):
     seeds = spark.createDataFrame([(0,)], ["id"])
     got = {
         r["id"]: r["rank"]
-        for r in personalized_pagerank_int(edges, seeds, iterations=3).collect()
+        for r in personalized_pagerank_int(
+            out_degree_weighted(edges), seeds, iterations=3
+        ).collect()
     }
     base = 10**12
     # the walk frontier after 3 hops reaches node 3 but NEVER node 4,

@@ -254,6 +254,8 @@ def test_worker_daemon_only_where_workers_import_the_package(tmp_path, monkeypat
     assert key not in session.session_conf(env={})[1]
     env = {"PYTHONPATH": os.pathsep.join([str(tmp_path), REPO])}
     assert session.session_conf(env=env)[1][key] == "odbc2parquet_spark.worker_daemon"
+    # executors on a cluster have neither the driver's directory nor its path
+    assert key not in session.session_conf("spark://host:7077", env=env)[1]
     monkeypatch.chdir(REPO)
     assert session.workers_import_package({})
 

@@ -794,13 +794,13 @@ def test_pagerank_intermediate_checkpoint_branch(spark):
     # 9 iterations pass the intermediate truncations (every 4 rounds:
     # rounds 4 and 8) before the last-round checkpoint; invariants: one
     # row per node, total rank mass never exceeds the teleport-complete 10^12
-    from odbc2parquet_spark.operators.graph import pagerank_int
+    from odbc2parquet_spark.operators.graph import out_degree_weighted, pagerank_int
 
     nodes = spark.createDataFrame([(i,) for i in range(6)], ["id"])
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 0), (3, 4)], ["src", "dst"]
     )
-    out = pagerank_int(nodes, edges, iterations=9).collect()
+    out = pagerank_int(nodes, out_degree_weighted(edges), iterations=9).collect()
     assert len(out) == 6
     assert sum(r["rank"] for r in out) <= 10**12
     assert all(r["rank"] >= (15 * (10**12 // 6)) // 100 for r in out)
@@ -829,9 +829,9 @@ def test_fixed_round_fixpoints_sql_executions(spark):
         ["src", "dst"],
     )
     runs = {
-        "pagerank_int": lambda: G.pagerank_int(nodes, edges, iterations=3),
+        "pagerank_int": lambda: G.pagerank_int(nodes, G.out_degree_weighted(edges), iterations=3),
         "personalized_pagerank_int": lambda: G.personalized_pagerank_int(
-            edges, nodes.filter(F.col("id") % 4 == 0), iterations=3
+            G.out_degree_weighted(edges), nodes.filter(F.col("id") % 4 == 0), iterations=3
         ),
         "hits_int": lambda: G.hits_int(nodes, edges, rounds=2),
         "label_propagation_int": lambda: G.label_propagation_int(nodes, edges, rounds=3),
