@@ -359,6 +359,17 @@ def main(argv: list[str] | None = None) -> int:
             "Spark's JDBC source sends the SQL text as is and cannot bind ?. "
             "Write the values into the SQL instead."
         )
+    # usage errors exit here, before the seconds-long session start
+    if args.cmd == "query":
+        if not (args.tables_dir or args.jdbc_url):
+            raise SystemExit(
+                "Either --dsn, --jdbc-url or --tables-dir must be specified."
+            )
+        encodings = _parse_encodings(args.parquet_column_encoding)
+    if args.cmd == "insert" and not (args.jdbc_url or args.dbapi):
+        raise SystemExit("insert needs --dsn, --jdbc-url or --dbapi")
+    if args.cmd == "exec" and not args.dbapi:
+        raise SystemExit("exec needs --dbapi (a PEP-249 write-back target)")
 
     from odbc2parquet_spark import session
 
@@ -385,7 +396,7 @@ def main(argv: list[str] | None = None) -> int:
         sql = sys.stdin.read() if args.sql == "-" else args.sql
         if args.tables_dir:
             engine = Engine.for_sf_dir(spark, args.tables_dir)
-        elif args.jdbc_url:
+        else:
             from odbc2parquet_spark.sources.jdbc import ConnectOpts, read_query
 
             df = read_query(
@@ -396,10 +407,6 @@ def main(argv: list[str] | None = None) -> int:
             df.createOrReplaceTempView("__jdbc_result__")
             engine = Engine(spark)
             sql = "SELECT * FROM __jdbc_result__"
-        else:
-            raise SystemExit(
-                "Either --dsn, --jdbc-url or --tables-dir must be specified."
-            )
         from odbc2parquet_spark.mappings import MappingOptions
 
         mapping = MappingOptions(
@@ -417,7 +424,7 @@ def main(argv: list[str] | None = None) -> int:
             suffix_length=args.suffix_length,
             no_empty_file=args.no_empty_file,
             single_file=args.single_file or args.out.endswith(".par"),
-            column_encodings=_parse_encodings(args.parquet_column_encoding),
+            column_encodings=encodings,
             partition_by=tuple(args.partition_by),
             cluster_by=tuple(args.cluster_by),
         )
@@ -442,8 +449,6 @@ def main(argv: list[str] | None = None) -> int:
             _connection_factory(args.dbapi, args.dbapi_connect) if args.dbapi else None
         )
         if args.cmd == "insert":
-            if not (args.jdbc_url or factory):
-                raise SystemExit("insert needs --dsn, --jdbc-url or --dbapi")
             jdbc_options = {}
             if args.user:
                 jdbc_options["user"] = args.user
@@ -458,8 +463,6 @@ def main(argv: list[str] | None = None) -> int:
                 connection_factory=factory,
             )
         else:
-            if factory is None:
-                raise SystemExit("exec needs --dbapi (a PEP-249 write-back target)")
             n = execute_parquet(
                 spark, args.input, args.statement, connection_factory=factory
             )

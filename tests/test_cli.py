@@ -4,6 +4,7 @@ import json
 import os
 
 import pyarrow.parquet as pq
+import pytest
 
 from odbc2parquet_spark.__main__ import main
 
@@ -322,6 +323,32 @@ def test_cli_jdbc_url_rejects_params():
             ["query", "--jdbc-url", "jdbc:derby:memory:never", "out.par",
              'SELECT * FROM t WHERE "a" > ?', "5"]
         )
+
+
+@pytest.mark.parametrize(
+    "argv,message",
+    [
+        pytest.param(["query", "out.par", "SELECT 1"],
+                     "Either --dsn, --jdbc-url or --tables-dir", id="query"),
+        pytest.param(["insert", "in.par", "t"],
+                     "insert needs --dsn, --jdbc-url or --dbapi", id="insert"),
+        pytest.param(["exec", "--jdbc-url", "jdbc:derby:memory:x", "in.par", "DELETE FROM t"],
+                     "exec needs --dbapi", id="exec"),
+        pytest.param(["query", "--tables-dir", ".", "--parquet-column-encoding", "plain",
+                      "out.par", "SELECT 1"], "expects COLUMN:ENCODING", id="encoding"),
+    ],
+)
+def test_cli_usage_errors_exit_before_spark(monkeypatch, argv, message):
+    """A usage error exits before the session starts, so the user does
+    not wait seconds of JVM start-up to read it."""
+    from odbc2parquet_spark import session
+
+    def no_session(*a, **k):
+        raise AssertionError("a Spark session was started")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    with pytest.raises(SystemExit, match=message):
+        main(argv)
 
 
 def test_cli_dsn_unknown_is_actionable(tmp_path, monkeypatch):
