@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from odbc2parquet_spark import cachereg
+from odbc2parquet_spark.params import quote_identifier
 
 #: table names the driver generates at every scale factor (TESTDATA.md)
 TABLES = (
@@ -113,6 +114,6 @@ def register_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         if ext != ".parquet":
             continue
         df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView("`" + name.replace("`", "``") + "`")
+        df.createOrReplaceTempView(quote_identifier(name, style="backtick"))
         out[name] = df
     return out

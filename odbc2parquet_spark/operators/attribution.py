@@ -302,6 +302,28 @@ def journey_transitions(
     )
 
 
+def _micro_weights(
+    events: DataFrame,
+    channels: tuple[str, ...],
+    conv_type: str,
+    user_col: str,
+    ts_col: str,
+    type_col: str,
+    id_col: str,
+) -> list[tuple[str, str, int]]:
+    """(src, dst, w) on the driver: the :func:`journey_transitions` table
+    (at most (|channels|+2)^2 rows) with each count turned into the
+    integer micro-unit weight w = cnt*10^6 div out(src), out-degrees
+    taken over the full graph."""
+    rows = journey_transitions(
+        events, channels, conv_type, user_col, ts_col, type_col, id_col
+    ).collect()
+    out_n: dict[str, int] = {}
+    for r in rows:
+        out_n[r.src] = out_n.get(r.src, 0) + r.cnt
+    return [(r.src, r.dst, r.cnt * 1_000_000 // out_n[r.src]) for r in rows]
+
+
 def markov_removal_effect(
     events: DataFrame,
     channels: tuple[str, ...] = ("click", "view", "signup"),
@@ -338,22 +360,15 @@ def markov_removal_effect(
     state frames of a few dozen rows. No driver data access; rounds are
     fixed so the plan is static.
     """
-    trans = journey_transitions(
-        events, channels, conv_type, user_col, ts_col, type_col, id_col
-    )
-    # The corpus collapsed to the <= (|channels|+2)^2-row transition
-    # table above; everything below is exact int64 arithmetic over a few
-    # dozen values. Round 11: run it ON THE DRIVER (a bounded pull, like
+    # Round 11: the chain below runs ON THE DRIVER (a bounded pull, like
     # the PQ codebooks and the BPE local loop) — the iterated-join form
     # paid ~18 micro-jobs plus two eager localCheckpoints, ~50 scheduler
     # round-trips for microseconds of math (suite median 2.9s -> ~1.6s;
     # the remaining cost is journey_transitions itself, which stays
     # distributed at any corpus size).
-    rows = trans.collect()
-    out_n: dict[str, int] = {}
-    for r in rows:
-        out_n[r.src] = out_n.get(r.src, 0) + r.cnt
-    wlist = [(r.src, r.dst, r.cnt * 1_000_000 // out_n[r.src]) for r in rows]
+    wlist = _micro_weights(
+        events, channels, conv_type, user_col, ts_col, type_col, id_col
+    )
     results: list[tuple[str, int]] = []
     for removed in ("none", *channels):
         edges = [
@@ -448,23 +463,17 @@ def journey_occupancy(
     re-expansion. Scale shape: identical to the removal-effect chain —
     the corpus collapses to the <= (channels+1)^2-row transition table
     before any algebra."""
-    trans = journey_transitions(
-        events, channels, conv_type, user_col, ts_col, type_col, id_col
-    )
     # Same round-11 driver-side rewrite as markov_removal_effect: the
-    # corpus collapsed to the bounded transition table above, and the
     # truncated fundamental-matrix series is exact int64 arithmetic over
     # a few dozen values — the iterated-join form (8 rounds x 2 joins +
     # periodic eager localCheckpoints over a <=25-row frame) was pure
     # scheduler overhead (suite median 2.65s -> ~1.6s).
-    rows = trans.collect()
-    out_n: dict[str, int] = {}
-    for r in rows:
-        out_n[r.src] = out_n.get(r.src, 0) + r.cnt
     wlist = [
-        (r.src, r.dst, r.cnt * 1_000_000 // out_n[r.src])
-        for r in rows
-        if r.dst not in ("conv", "null")
+        (s, d, w)
+        for s, d, w in _micro_weights(
+            events, channels, conv_type, user_col, ts_col, type_col, id_col
+        )
+        if d not in ("conv", "null")
     ]
     states = sorted(
         {s for s, _, _ in wlist} | {d for _, d, _ in wlist}

@@ -62,9 +62,8 @@ def word_shingles(
 ) -> DataFrame:
     """Distinct n-word shingles per document: (id, g).
 
-    Built-ins only: split + transform over an index sequence + explode.
-    The distinct is a shuffle on (id, g) — unavoidable for set semantics,
-    partially aggregated map-side.
+    :func:`word_shingle_stream` plus a distinct: a shuffle on (id, g) —
+    unavoidable for set semantics, partially aggregated map-side.
 
     ``spread`` routes the input through catalog.spread_scan (round-robin
     repartition when the file layout under-parallelizes the scan). OPT-IN
@@ -74,23 +73,7 @@ def word_shingles(
     the cores (dd_band_curve 3.11->3.43, tx_curation_delta 6.27->7.12 in
     the round-12 interleaved A/B).
     """
-    ws = F.split(F.col(text_col), " ")
-    parts = [f"ws[i - 1 + {k}]" for k in range(n)]
-    # NB: Spark's sequence(1, 0) yields DESCENDING [1, 0], not empty —
-    # short documents must short-circuit to an empty shingle set.
-    shingle_expr = (
-        f"CASE WHEN size(ws) < {n} THEN array() ELSE "
-        f"transform(sequence(1, size(ws) - {n - 1}), "
-        f"i -> concat_ws(' ', {', '.join(parts)})) END"
-    )
-    from odbc2parquet_spark.catalog import spread_scan
-
-    return (
-        (spread_scan(docs) if spread else docs)
-        .select(F.col(id_col).alias("id"), ws.alias("ws"))
-        .select("id", F.explode(F.expr(shingle_expr)).alias("g"))
-        .distinct()
-    )
+    return word_shingle_stream(docs, n, text_col, id_col, spread).distinct()
 
 
 # ------------------------------------------------------- n-gram Jaccard
@@ -158,6 +141,9 @@ def word_shingle_stream(
 ) -> DataFrame:
     """Non-distinct n-word shingles per document: (id, g).
 
+    Built-ins only: split + transform over an index sequence + explode
+    (``spread`` as in :func:`word_shingles`).
+
     For MIN-aggregating consumers (MinHash) the distinct is pure waste:
     min over a multiset equals min over its set, and :func:`word_shingles`'
     ``.distinct()`` is a full shuffle of the corpus's (id, shingle) SET,
@@ -172,6 +158,8 @@ def word_shingle_stream(
     """
     ws = F.split(F.col(text_col), " ")
     parts = [f"ws[i - 1 + {k}]" for k in range(n)]
+    # NB: Spark's sequence(1, 0) yields DESCENDING [1, 0], not empty —
+    # short documents must short-circuit to an empty shingle set.
     shingle_expr = (
         f"CASE WHEN size(ws) < {n} THEN array() ELSE "
         f"transform(sequence(1, size(ws) - {n - 1}), "

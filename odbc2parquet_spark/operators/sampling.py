@@ -46,6 +46,37 @@ def stratified_sample(
 _QUANT = 1 << 40  # rate quantization: floor(rate * 2^40) is exact in double
 
 
+def _rate_sample(
+    df: DataFrame,
+    source_col: str,
+    key_col: str,
+    rated: DataFrame,
+    target: DataFrame,
+    weight: F.Column,
+) -> DataFrame:
+    """Hash-threshold sample ``df`` at each source's keep-rate
+    ``weight * _t_ / _n_``, read from the per-source ``rated`` frame
+    (``_src_``, ``_n_``) joined with the one-row ``target`` (``_t_``),
+    quantized to 2^-40 as :func:`mixture_sample` describes."""
+    thresholds = (
+        rated.join(F.broadcast(target))
+        .withColumn(
+            "_thr_",
+            (
+                F.floor(weight * F.col("_t_") / F.col("_n_") * F.lit(float(_QUANT)))
+                * F.lit(_HASH_DOMAIN // _QUANT)
+            ).cast("long"),
+        )
+        .select("_src_", "_thr_")
+    )
+    h = _hash60(F.col(key_col))
+    return (
+        df.join(F.broadcast(thresholds), df[source_col] == F.col("_src_"))
+        .filter(h < F.col("_thr_"))
+        .drop("_src_", "_thr_")
+    )
+
+
 def mixture_sample(
     df: DataFrame, source_col: str, key_col: str, weights: dict[str, float]
 ) -> DataFrame:
@@ -70,23 +101,7 @@ def mixture_sample(
         "_ratio_", F.col("_n_") / w[F.col("_src_")]
     )
     target = rated.agg(F.min("_ratio_").alias("_t_"))
-    thresholds = (
-        rated.join(F.broadcast(target))
-        .withColumn(
-            "_thr_",
-            (
-                F.floor(w[F.col("_src_")] * F.col("_t_") / F.col("_n_") * F.lit(float(_QUANT)))
-                * F.lit(_HASH_DOMAIN // _QUANT)
-            ).cast("long"),
-        )
-        .select("_src_", "_thr_")
-    )
-    h = _hash60(F.col(key_col))
-    return (
-        df.join(F.broadcast(thresholds), df[source_col] == F.col("_src_"))
-        .filter(h < F.col("_thr_"))
-        .drop("_src_", "_thr_")
-    )
+    return _rate_sample(df, source_col, key_col, rated, target, w[F.col("_src_")])
 
 
 def pps_sample(
@@ -355,20 +370,4 @@ def temperature_sample(
     )
     rated = counts.withColumn("_w_", F.sqrt(F.col("_n_")))
     target = rated.agg(F.min(F.col("_n_") / F.col("_w_")).alias("_t_"))
-    thresholds = (
-        rated.join(F.broadcast(target))
-        .withColumn(
-            "_thr_",
-            (
-                F.floor(F.col("_w_") * F.col("_t_") / F.col("_n_") * F.lit(float(_QUANT)))
-                * F.lit(_HASH_DOMAIN // _QUANT)
-            ).cast("long"),
-        )
-        .select("_src_", "_thr_")
-    )
-    h = _hash60(F.col(key_col))
-    return (
-        df.join(F.broadcast(thresholds), df[source_col] == F.col("_src_"))
-        .filter(h < F.col("_thr_"))
-        .drop("_src_", "_thr_")
-    )
+    return _rate_sample(df, source_col, key_col, rated, target, F.col("_w_"))

@@ -97,6 +97,24 @@ def _checked_dim(vec: F.Column, dim: int, where: str) -> F.Column:
     ).otherwise(vec)
 
 
+def _cosine_rank(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cos4) -> the ranked cosine top-k frame. One
+    definition of the output contract (desc-cosine/asc-id tiebreak, column
+    names) shared by exact and IVF search, as :func:`_adc_rank` is for ADC."""
+    w = W.partitionBy("query_id").orderBy(F.desc("cos4"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id",
+            "neighbor_id",
+            # + 0.0 pins IEEE signed zero (see knn_graph)
+            (F.col("cos4") + F.lit(0.0)).alias("cosine4"),
+            "rank",
+        )
+    )
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -137,18 +155,7 @@ def brute_force_topk(
         )
         .select("query_id", "neighbor_id", "cos4")
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos4"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            # + 0.0 pins IEEE signed zero (see knn_graph)
-            (F.col("cos4") + F.lit(0.0)).alias("cosine4"),
-            "rank",
-        )
-    )
+    return _cosine_rank(scored, k)
 
 
 def hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
@@ -391,6 +398,39 @@ def ivf_seed_centroids(vectors: DataFrame, k_cells: int = 16, id_col: str = "vec
     )
 
 
+def _centroid_scores(
+    vectors: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """Every (vector, centroid) pair with its 4-decimal cosine ``cos4``:
+    centroids broadcast, norms computed once per row before the cross so
+    each pair costs one fold."""
+    c = F.broadcast(centroids.withColumn("csq", norm_sq(F.col("centroid"))))
+    return vectors.select(
+        F.col(id_col).alias("vec_id"),
+        F.col(vec_col).alias("v"),
+        norm_sq(F.col(vec_col)).alias("vsq"),
+    ).join(c).withColumn(
+        "cos4",
+        F.round(
+            dot(F.col("v"), F.col("centroid")) / F.sqrt(F.col("vsq") * F.col("csq")), 4
+        ),
+    )
+
+
+def _packed_cos() -> F.Column:
+    """(10000 - cos4*10^4) << 43 | centroid_id: a long whose min picks the
+    best cosine, ties to the lowest centroid id. cos4*10^4 is within 1 ulp
+    of an integer (4-decimal quantized), so round-to-0-decimals + long
+    cast recovers it exactly."""
+    ncos_scaled = F.lit(10000) - F.round(F.col("cos4") * 10000, 0).cast("long")
+    return ncos_scaled * F.lit(1 << 43) + F.col("centroid_id").cast("long")
+
+
+def _unpacked_cos(enc: str) -> F.Column:
+    """The cos4 of a :func:`_packed_cos` value."""
+    return (F.lit(10000) - F.shiftright(F.col(enc), 43)).cast("double") / F.lit(10000.0)
+
+
 def ivf_assign(
     vectors: DataFrame,
     centroids: DataFrame,
@@ -410,36 +450,20 @@ def ivf_assign(
     the centroid_id < 2^43 packing bound. Norms computed once per row
     before the cross: one fold per pair.
     """
-    c = F.broadcast(centroids.withColumn("csq", norm_sq(F.col("centroid"))))
-    scored = vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        norm_sq(F.col(vec_col)).alias("vsq"),
-    ).join(c).withColumn(
-        "cos4",
-        F.round(
-            dot(F.col("v"), F.col("centroid")) / F.sqrt(F.col("vsq") * F.col("csq")), 4
-        ),
-    )
-    # cos4*10^4 is within 1 ulp of an integer (4-decimal quantized), so
-    # round-to-0-decimals + long cast recovers it exactly
-    ncos_scaled = F.lit(10000) - F.round(F.col("cos4") * 10000, 0).cast("long")
+    scored = _centroid_scores(vectors, centroids, id_col, vec_col)
     enc = F.when(
         (F.col("centroid_id") < 0) | (F.col("centroid_id") >= F.lit(1 << 43)),
         F.expr(
             "raise_error('ivf_assign: centroid_id outside the packing bound')"
         ).cast("long"),
-    ).otherwise(ncos_scaled * F.lit(1 << 43) + F.col("centroid_id").cast("long"))
+    ).otherwise(_packed_cos())
     return (
         scored.groupBy("vec_id")
         .agg(F.min(enc).alias("best_enc"))
         .select(
             "vec_id",
             (F.col("best_enc") % F.lit(1 << 43)).alias("centroid_id"),
-            (
-                (F.lit(10000) - F.shiftright(F.col("best_enc"), 43))
-                .cast("double") / F.lit(10000.0)
-            ).alias("cos4"),
+            _unpacked_cos("best_enc").alias("cos4"),
         )
     )
 
@@ -469,24 +493,10 @@ def ivf_silhouette(
     hash-aggregations over the N x k scored rows (best enc, then min enc
     above best), both map-side partial; no sort, no window over the
     corpus."""
-    c = F.broadcast(centroids.withColumn("csq", norm_sq(F.col("centroid"))))
-    scored = vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        norm_sq(F.col(vec_col)).alias("vsq"),
-    ).join(c).withColumn(
-        "cos4",
-        F.round(
-            dot(F.col("v"), F.col("centroid")) / F.sqrt(F.col("vsq") * F.col("csq")), 4
-        ),
-    )
-    ncos_scaled = F.lit(10000) - F.round(F.col("cos4") * 10000, 0).cast("long")
-    enc_col = (ncos_scaled * F.lit(1 << 43) + F.col("centroid_id").cast("long")).alias(
-        "enc"
-    )
+    scored = _centroid_scores(vectors, centroids, id_col, vec_col)
     from odbc2parquet_spark import cachereg
 
-    encs = cachereg.track(scored.select("vec_id", enc_col).persist())
+    encs = cachereg.track(scored.select("vec_id", _packed_cos().alias("enc")).persist())
     best = encs.groupBy("vec_id").agg(F.min("enc").alias("e1"))
     second = (
         encs.join(best, "vec_id")
@@ -494,18 +504,11 @@ def ivf_silhouette(
         .groupBy("vec_id")
         .agg(F.min("enc").alias("e2"), F.min("e1").alias("e1"))
     )
-    def _cos(e):  # noqa: ANN001 - column helper
-        return (
-            F.lit(10000) - F.shiftright(F.col(e), 43)
-        ).cast("double") / F.lit(10000.0)
-
+    own, nxt = _unpacked_cos("e1"), _unpacked_cos("e2")
     sil = second.select(
         "vec_id",
         (F.col("e1") % F.lit(1 << 43)).alias("centroid_id"),
-        F.when(
-            _cos("e2") < 1.0,
-            F.round((_cos("e1") - _cos("e2")) / (F.lit(1.0) - _cos("e2")), 6),
-        )
+        F.when(nxt < 1.0, F.round((own - nxt) / (F.lit(1.0) - nxt), 6))
         .otherwise(F.lit(0.0))
         .cast("decimal(18,6)")
         .alias("s"),
@@ -592,18 +595,7 @@ def ivf_search(
         .withColumn("cos4", F.round(cosine(F.col("qvec"), F.col("nvec")), 4))
     )  # candidate set is already nprobe/k_cells of the corpus; per-pair
     # norm folds are acceptable here (queries are few)
-    w = W.partitionBy("query_id").orderBy(F.desc("cos4"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            # + 0.0 pins IEEE signed zero (see knn_graph)
-            (F.col("cos4") + F.lit(0.0)).alias("cosine4"),
-            "rank",
-        )
-    )
+    return _cosine_rank(scored, k)
 
 
 def ivf_probe_cells(

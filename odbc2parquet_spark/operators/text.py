@@ -1098,6 +1098,37 @@ def novelty_scores(docs: DataFrame, n: int = 2, text_col: str = "text") -> DataF
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
+def _bigram_rows(prepared: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, a, b): one row per adjacent word pair of the ``ws`` words
+    array; a document shorter than two words has none (sequence(1, 0)
+    descends, so it short-circuits)."""
+    bigram_expr = (
+        "CASE WHEN size(ws) < 2 THEN array() ELSE "
+        "transform(sequence(1, size(ws) - 1), "
+        "i -> struct(ws[i - 1] AS a, ws[i] AS b)) END"
+    )
+    return prepared.select(*keys, F.explode(F.expr(bigram_expr)).alias("p")).select(
+        *keys, F.col("p.a").alias("a"), F.col("p.b").alias("b")
+    )
+
+
+def _half_up_mean_term() -> F.Column:
+    """Per-group mean of the decimal(18,6) ``term`` column, rounded half-up
+    to 6 decimals in EXACT integer micro-units. ROUND(sum/count, 6) on the
+    double quotient diverges between engines when the quotient's shortest
+    decimal repr lands on a .5e-6 tie (Spark rounds the decimal repr
+    HALF_UP; DuckDB rounds the binary value) — observed on 2 of 2500 docs
+    at sf0.1. (sign * ((2|S| + n) div 2n)) / 1e6 is pure int64 on both
+    engines; the final division is exact in double (|micro| << 2^53)."""
+    return (
+        F.when(F.sum("term") < 0, F.lit(-1)).otherwise(F.lit(1))
+        * F.expr(
+            "(2 * abs(CAST(sum(term) * 1000000 AS BIGINT)) + count(*))"
+            " div (2 * count(*))"
+        )
+    ).cast("double") / F.lit(1e6)
+
+
 def bigram_lm_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Conditional add-k-smoothed bigram language-model score per document
     (the CCNet/KenLM-style quality signal, self-trained on the corpus):
@@ -1119,14 +1150,7 @@ def bigram_lm_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     which AQE handles (hot keys split by skew-join).
     """
     prepared = docs.select("doc_id", words(F.col(text_col)).alias("ws"))
-    bigram_expr = (
-        "CASE WHEN size(ws) < 2 THEN array() ELSE "
-        "transform(sequence(1, size(ws) - 1), "
-        "i -> struct(ws[i - 1] AS a, ws[i] AS b)) END"
-    )
-    doc_bg = prepared.select(
-        "doc_id", F.explode(F.expr(bigram_expr)).alias("p")
-    ).select("doc_id", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+    doc_bg = _bigram_rows(prepared, "doc_id")
     cab = doc_bg.groupBy("a", "b").agg(F.count("*").alias("cab"))
     ctx = doc_bg.groupBy("a").agg(F.count("*").alias("ctx"))
     vocab = prepared.select(F.explode("ws").alias("w")).agg(
@@ -1329,24 +1353,8 @@ def stupid_backoff_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
         F.sum((F.col("o") == 3).cast("long")).alias("n_order3"),
         F.sum((F.col("o") == 2).cast("long")).alias("n_order2"),
         F.sum((F.col("o") == 1).cast("long")).alias("n_order1"),
-        # avg in EXACT integer micro-units with explicit half-up: the sum
-        # is an exact decimal(18,6), but ROUND(sum/count, 6) on the double
-        # quotient diverges between engines when the quotient's shortest
-        # decimal repr lands on a .5e-6 tie (Spark rounds the decimal
-        # repr HALF_UP; DuckDB rounds the binary value) — observed on 2 of
-        # 2500 docs at sf0.1. (sign * ((2|S| + n) div 2n)) / 1e6 is pure
-        # int64 on both engines; the final division is exact in double
-        # (|micro| << 2^53).
-        (
-            F.when(F.sum("term") < 0, F.lit(-1)).otherwise(F.lit(1))
-            * F.expr(
-                "(2 * abs(CAST(sum(term) * 1000000 AS BIGINT)) + count(*))"
-                " div (2 * count(*))"
-            )
-        ).cast("double").alias("_avg_micro"),
-    ).withColumn(
-        "avg_logscore", F.col("_avg_micro") / F.lit(1e6)
-    ).drop("_avg_micro")
+        _half_up_mean_term().alias("avg_logscore"),
+    )
 
 
 def naive_bayes_lang(
@@ -1513,14 +1521,7 @@ def kneser_ney_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     bigram-keyed, Zipf-skewed like bigram_lm_scores (AQE skew-split).
     """
     prepared = docs.select("doc_id", words(F.col(text_col)).alias("ws"))
-    bigram_expr = (
-        "CASE WHEN size(ws) < 2 THEN array() ELSE "
-        "transform(sequence(1, size(ws) - 1), "
-        "i -> struct(ws[i - 1] AS a, ws[i] AS b)) END"
-    )
-    doc_bg = prepared.select(
-        "doc_id", F.explode(F.expr(bigram_expr)).alias("p")
-    ).select("doc_id", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+    doc_bg = _bigram_rows(prepared, "doc_id")
     cab = doc_bg.groupBy("a", "b").agg(F.count("*").alias("cab"))
     # Round 11 negative result: deriving ctx/N1+/T from the cab COUNT
     # table (ctx(a) = sum_b c(ab), N1+ = row counts, T = total rows —
@@ -1551,22 +1552,9 @@ def kneser_ney_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
         .join(F.broadcast(t))
         .withColumn("term", term)
     )
-    # integer-exact half-up average (same .5e-6 ROUND-tie rationale as
-    # stupid_backoff_scores: the double quotient's decimal repr can tie)
-    return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_bigrams"),
-            (
-                F.when(F.sum("term") < 0, F.lit(-1)).otherwise(F.lit(1))
-                * F.expr(
-                    "(2 * abs(CAST(sum(term) * 1000000 AS BIGINT)) + count(*))"
-                    " div (2 * count(*))"
-                )
-            ).cast("double").alias("_avg_micro"),
-        )
-        .withColumn("avg_logprob_kn", F.col("_avg_micro") / F.lit(1e6))
-        .drop("_avg_micro")
+    return scored.groupBy("doc_id").agg(
+        F.count("*").alias("n_bigrams"),
+        _half_up_mean_term().alias("avg_logprob_kn"),
     )
 
 
@@ -1705,23 +1693,14 @@ def bigram_lm_scores_cross(
     the reference model broadcasts and the crawl never shuffles twice.
     """
     t_prep = train_docs.select(words(F.col(text_col)).alias("ws"))
-    bigram_expr = (
-        "CASE WHEN size(ws) < 2 THEN array() ELSE "
-        "transform(sequence(1, size(ws) - 1), "
-        "i -> struct(ws[i - 1] AS a, ws[i] AS b)) END"
-    )
-    t_bg = t_prep.select(F.explode(F.expr(bigram_expr)).alias("p")).select(
-        F.col("p.a").alias("a"), F.col("p.b").alias("b")
-    )
+    t_bg = _bigram_rows(t_prep)
     cab = t_bg.groupBy("a", "b").agg(F.count("*").alias("cab"))
     ctx = t_bg.groupBy("a").agg(F.count("*").alias("ctx"))
     vocab = t_prep.select(F.explode("ws").alias("w")).agg(
         F.countDistinct("w").alias("v")
     )
-    s_bg = (
-        score_docs.select("doc_id", words(F.col(text_col)).alias("ws"))
-        .select("doc_id", F.explode(F.expr(bigram_expr)).alias("p"))
-        .select("doc_id", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+    s_bg = _bigram_rows(
+        score_docs.select("doc_id", words(F.col(text_col)).alias("ws")), "doc_id"
     )
     # |V|=0 (empty/degenerate train_docs) would make the smoothing
     # denominator 0 — Spark double division then yields Infinity->null
@@ -1749,26 +1728,9 @@ def bigram_lm_scores_cross(
         .withColumn("term", term)
         .withColumn("oov", F.when(F.col("cab").isNull(), 1).otherwise(0))
     )
-    return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_bigrams"),
-            # integer-exact half-up average (same .5e-6 ROUND-tie rationale
-            # as stupid_backoff_scores — plain ROUND(sum/count, 6) diverged
-            # on 3 of 4750 docs at sf0.1)
-            (
-                F.when(F.sum("term") < 0, F.lit(-1)).otherwise(F.lit(1))
-                * F.expr(
-                    "(2 * abs(CAST(sum(term) * 1000000 AS BIGINT)) + count(*))"
-                    " div (2 * count(*))"
-                )
-            ).cast("double").alias("_avg_micro"),
-            F.round(F.sum("oov") / F.count("*"), 6).alias("oov_rate"),
-        )
-        .select(
-            "doc_id",
-            "n_bigrams",
-            (F.col("_avg_micro") / F.lit(1e6)).alias("avg_logprob"),
-            "oov_rate",
-        )
+    return scored.groupBy("doc_id").agg(
+        F.count("*").alias("n_bigrams"),
+        # plain ROUND(sum/count, 6) diverged on 3 of 4750 docs at sf0.1
+        _half_up_mean_term().alias("avg_logprob"),
+        F.round(F.sum("oov") / F.count("*"), 6).alias("oov_rate"),
     )

@@ -702,27 +702,11 @@ _SURVIVAL_CTE = """
     )"""
 
 
-@query(
-    "ev_time_to_convert",
-    oracle="WITH "
-    + _SURVIVAL_CTE
-    + """
-    SELECT CAST(t AS BIGINT) AS t_days,
-           CAST(n_total - n_prior AS BIGINT) AS n_risk,
-           CAST(n_events AS BIGINT) AS n_events,
-           ROUND(n_events * 1.0 / (n_total - n_prior), 6) AS hazard
-    FROM cum WHERE n_events > 0 ORDER BY t_days
-    """,
-)
-def ev_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Signup-to-first-purchase survival life table (operators/survival.
-    km_hazard_table): per day-since-signup, subjects still at risk, the
-    conversions that day, and the discrete hazard d/n — users who never
-    purchase are right-censored at the dataset's last timestamp. Exact
-    integer counts + one final division, so the table (and any KM
-    product folded from it) is engine-identical. The subjects build is
-    two keyed aggs + a 1-row max-ts broadcast; the life table groups by
-    duration (calendar-sized) and windows over THOSE rows only."""
+def _signup_life_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The signup-to-first-purchase life table (operators/survival.
+    km_hazard_table) over one subject per signed-up user: days to the
+    first purchase at or after signup, right-censored at the dataset's
+    last timestamp — the Spark side of ``_SURVIVAL_CTE``."""
     from odbc2parquet_spark.operators.survival import km_hazard_table
 
     ev = load_table(spark, sf_dir, "events").withColumn(
@@ -751,8 +735,32 @@ def ev_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("t_obs"),
         F.col("conv_ts").isNotNull().alias("converted"),
     )
+    return km_hazard_table(subj, "t_obs", "converted")
+
+
+@query(
+    "ev_time_to_convert",
+    oracle="WITH "
+    + _SURVIVAL_CTE
+    + """
+    SELECT CAST(t AS BIGINT) AS t_days,
+           CAST(n_total - n_prior AS BIGINT) AS n_risk,
+           CAST(n_events AS BIGINT) AS n_events,
+           ROUND(n_events * 1.0 / (n_total - n_prior), 6) AS hazard
+    FROM cum WHERE n_events > 0 ORDER BY t_days
+    """,
+)
+def ev_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Signup-to-first-purchase survival life table (operators/survival.
+    km_hazard_table): per day-since-signup, subjects still at risk, the
+    conversions that day, and the discrete hazard d/n — users who never
+    purchase are right-censored at the dataset's last timestamp. Exact
+    integer counts + one final division, so the table (and any KM
+    product folded from it) is engine-identical. The subjects build is
+    two keyed aggs + a 1-row max-ts broadcast; the life table groups by
+    duration (calendar-sized) and windows over THOSE rows only."""
     return (
-        km_hazard_table(subj, "t_obs", "converted")
+        _signup_life_table(spark, sf_dir)
         .select(
             F.col("t").cast("long").alias("t_days"),
             "n_risk",
@@ -1778,6 +1786,20 @@ _DAILY_SERIES_CTE = """
     )"""
 
 
+
+def _daily_series(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(key, day, x): each event type's decimal-exact daily mean value —
+    the Spark side of ``_DAILY_SERIES_CTE``."""
+    ev = load_table(spark, sf_dir, "events")
+    day = F.floor(F.unix_seconds(F.col("ts").cast("timestamp")) / 86400).cast("long")
+    dec = F.col("value").cast("decimal(18,6)")
+    return (
+        ev.select(F.col("event_type").alias("key"), day.alias("day"), dec.alias("vd"))
+        .groupBy("key", "day")
+        .agg(F.round(F.sum("vd").cast("double") / F.count("*"), 6).alias("x"))
+    )
+
+
 @query(
     "ev_holt_forecast",
     oracle="WITH RECURSIVE "
@@ -1811,15 +1833,7 @@ def ev_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     classical forecasting trio with ev_stl_decompose and ev_mase_eval."""
     from odbc2parquet_spark.operators.rollup import holt_forecast
 
-    ev = load_table(spark, sf_dir, "events")
-    day = F.floor(F.unix_seconds(F.col("ts").cast("timestamp")) / 86400).cast("long")
-    dec = F.col("value").cast("decimal(18,6)")
-    daily = (
-        ev.select(F.col("event_type").alias("key"), day.alias("day"), dec.alias("vd"))
-        .groupBy("key", "day")
-        .agg(F.round(F.sum("vd").cast("double") / F.count("*"), 6).alias("x"))
-    )
-    out = holt_forecast(daily, "key", "day", "x", horizons=(1, 7))
+    out = holt_forecast(_daily_series(spark, sf_dir), "key", "day", "x", horizons=(1, 7))
     return out.select(F.col("key").alias("event_type"), "n_days", "level", "trend", "f1", "f7")
 
 
@@ -2115,40 +2129,9 @@ def ev_km_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROUND(6) is presentation, not a tolerance). Scale shape: subjects
     collapse map-side to a calendar-sized life table; the O(T^2) prefix
     unroll runs on that tiny table only."""
-    from odbc2parquet_spark.operators.survival import (
-        km_hazard_table,
-        km_survival_curve,
-    )
+    from odbc2parquet_spark.operators.survival import km_survival_curve
 
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    su = ev.filter(F.col("event_type") == "signup").groupBy("user_id").agg(
-        F.min("ts").alias("signup_ts")
-    )
-    pu = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts")
-    )
-    fp = (
-        su.join(
-            pu,
-            (su["user_id"] == pu["p_user"]) & (pu["p_ts"] >= su["signup_ts"]),
-            "left",
-        )
-        .groupBy("user_id", "signup_ts")
-        .agg(F.min("p_ts").alias("conv_ts"))
-    )
-    mx = ev.agg(F.max("ts").alias("max_ts"))
-    subj = fp.crossJoin(F.broadcast(mx)).select(
-        F.datediff(
-            F.to_date(F.coalesce(F.col("conv_ts"), F.col("max_ts"))),
-            F.to_date(F.col("signup_ts")),
-        ).alias("t_obs"),
-        F.col("conv_ts").isNotNull().alias("converted"),
-    )
-    lt = km_hazard_table(subj, "t_obs", "converted").select(
-        "t", "n_risk", "n_events"
-    )
+    lt = _signup_life_table(spark, sf_dir).select("t", "n_risk", "n_events")
     return km_survival_curve(lt).select(
         F.col("t").cast("long").alias("t_days"),
         F.col("n_risk").cast("long"),
@@ -2658,18 +2641,7 @@ def ev_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     certifies the entire fold."""
     from odbc2parquet_spark.operators.rollup import holt_winters_forecast
 
-    ev = load_table(spark, sf_dir, "events")
-    day = F.floor(F.unix_seconds(F.col("ts").cast("timestamp")) / 86400).cast(
-        "long"
-    )
-    dec = F.col("value").cast("decimal(18,6)")
-    daily = (
-        ev.select(
-            F.col("event_type").alias("key"), day.alias("day"), dec.alias("vd")
-        )
-        .groupBy("key", "day")
-        .agg(F.round(F.sum("vd").cast("double") / F.count("*"), 6).alias("x"))
-    )
+    daily = _daily_series(spark, sf_dir)
     out = holt_winters_forecast(daily, "key", "day", "x", period=7, horizons=(1, 7))
     return out.select(
         F.col("key").alias("event_type"), "n_days", "level", "trend", "f1", "f7"
@@ -2771,18 +2743,7 @@ def ev_hw_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     really is incremental."""
     from odbc2parquet_spark.operators.rollup import hw_backtest
 
-    ev = load_table(spark, sf_dir, "events")
-    day = F.floor(F.unix_seconds(F.col("ts").cast("timestamp")) / 86400).cast(
-        "long"
-    )
-    dec = F.col("value").cast("decimal(18,6)")
-    daily = (
-        ev.select(
-            F.col("event_type").alias("key"), day.alias("day"), dec.alias("vd")
-        )
-        .groupBy("key", "day")
-        .agg(F.round(F.sum("vd").cast("double") / F.count("*"), 6).alias("x"))
-    )
+    daily = _daily_series(spark, sf_dir)
     out = hw_backtest(daily, "key", "day", "x", period=7, n_origins=3)
     return out.select(
         F.col("key").alias("event_type"),

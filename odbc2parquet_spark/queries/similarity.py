@@ -819,6 +819,27 @@ def _recall10_sql(adc: str = "adc") -> str:
     )
 
 
+def _recall10(emb: DataFrame, probes: DataFrame, approx: DataFrame) -> DataFrame:
+    """(query_id, n_hits, recall10): per probe, how many of the approximate
+    (query_id, neighbor_id) rows ``approx`` are in the exact cosine top 10
+    over ``emb`` — the Spark side of ``_recall10_sql``."""
+    exact = S.brute_force_topk(emb, probes, k=10).select("query_id", "neighbor_id")
+    hits = (
+        approx.join(exact, ["query_id", "neighbor_id"], "left_semi")
+        .groupBy("query_id")
+        .agg(F.count("*").cast("long").alias("n_hits"))
+    )
+    base = probes.select(F.col("vec_id").alias("query_id"))
+    return (
+        base.join(hits, "query_id", "left")
+        .select(
+            "query_id",
+            F.coalesce(F.col("n_hits"), F.lit(0)).cast("long").alias("n_hits"),
+        )
+        .withColumn("recall10", (F.col("n_hits") / F.lit(10.0)).cast("double"))
+    )
+
+
 @query(
     "sim_pq_recall",
     bench=False,
@@ -841,21 +862,7 @@ def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     adc = pq_adc_topk(emb, probes, m=_PQ_M, k_centroids=_PQ_K, dim=64, top_k=10).select(
         "query_id", "neighbor_id"
     )
-    exact = S.brute_force_topk(emb, probes, k=10).select("query_id", "neighbor_id")
-    hits = (
-        adc.join(exact, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count("*").cast("long").alias("n_hits"))
-    )
-    base = probes.select(F.col("vec_id").alias("query_id"))
-    return (
-        base.join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("long").alias("n_hits"),
-        )
-        .withColumn("recall10", (F.col("n_hits") / F.lit(10.0)).cast("double"))
-    )
+    return _recall10(emb, probes, adc)
 
 
 #: one Lloyd step on the PQ codebook + re-derived codes/LUT/ADC — appended
@@ -964,21 +971,7 @@ def sim_pq_lloyd_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     adc = pq_adc_topk(emb, probes, m=_PQ_M, dim=64, top_k=10, codebook=rcb).select(
         "query_id", "neighbor_id"
     )
-    exact = S.brute_force_topk(emb, probes, k=10).select("query_id", "neighbor_id")
-    hits = (
-        adc.join(exact, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count("*").cast("long").alias("n_hits"))
-    )
-    base = probes.select(F.col("vec_id").alias("query_id"))
-    return (
-        base.join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("long").alias("n_hits"),
-        )
-        .withColumn("recall10", (F.col("n_hits") / F.lit(10.0)).cast("double"))
-    )
+    return _recall10(emb, probes, adc)
 
 
 @query(
@@ -1002,21 +995,7 @@ def sim_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx = ivf_pq_search(
         emb, probes, nprobe=_NPROBE, k_cells=_K_CELLS, m=_PQ_M, k_centroids=_PQ_K, dim=64, top_k=10
     ).select("query_id", "neighbor_id")
-    exact = S.brute_force_topk(emb, probes, k=10).select("query_id", "neighbor_id")
-    hits = (
-        approx.join(exact, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count("*").cast("long").alias("n_hits"))
-    )
-    base = probes.select(F.col("vec_id").alias("query_id"))
-    return (
-        base.join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("long").alias("n_hits"),
-        )
-        .withColumn("recall10", (F.col("n_hits") / F.lit(10.0)).cast("double"))
-    )
+    return _recall10(emb, probes, approx)
 
 
 @query(
@@ -1061,17 +1040,7 @@ def sim_recall_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, probes, nprobe=_NPROBE, k_cells=_K_CELLS, m=_PQ_M,
         k_centroids=_PQ_K, dim=64, top_k=10,
     ).select("query_id", "neighbor_id")
-    exact = S.brute_force_topk(emb, probes, k=10).select("query_id", "neighbor_id")
-    hits = (
-        approx.join(exact, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count("*").cast("long").alias("n_hits"))
-    )
-    per_q = (
-        probes.select(F.col("vec_id").alias("query_id"))
-        .join(hits, "query_id", "left")
-        .select(F.coalesce(F.col("n_hits"), F.lit(0)).alias("n_hits"))
-    )
+    per_q = _recall10(emb, probes, approx)
     mean_recall = F.round(F.sum("n_hits") / (10.0 * F.count(F.lit(1))), 6)
     return per_q.agg(
         F.count(F.lit(1)).cast("long").alias("n_queries"),
@@ -2265,21 +2234,7 @@ def sim_ivf_pq_res_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, probes, nprobe=_NPROBE, k_cells=_K_CELLS, m=_PQ_M,
         k_centroids=_PQ_K, dim=64, top_k=10,
     ).select("query_id", "neighbor_id")
-    exact = S.brute_force_topk(emb, probes, k=10).select("query_id", "neighbor_id")
-    hits = (
-        approx.join(exact, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count("*").cast("long").alias("n_hits"))
-    )
-    base = probes.select(F.col("vec_id").alias("query_id"))
-    return (
-        base.join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("long").alias("n_hits"),
-        )
-        .withColumn("recall10", (F.col("n_hits") / F.lit(10.0)).cast("double"))
-    )
+    return _recall10(emb, probes, approx)
 
 
 @query(

@@ -43,7 +43,8 @@ def load_dsn_registry(path: str | None = None) -> dict[str, dict]:
     if not os.path.isfile(path):
         return {}
     try:
-        raw = json.load(open(path))
+        with open(path) as f:
+            raw = json.load(f)
     except ValueError as exc:
         raise ValueError(f"DSN alias file {path!r} is not valid JSON: {exc}")
     if not isinstance(raw, dict):

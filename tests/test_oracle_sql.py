@@ -4,7 +4,7 @@ Every oracle must plan in DuckDB over the sf0.001 tables, so a broken
 composition of shared CTEs (a lost comma, a misspelled CTE name) fails
 here and not in the next full oracle sweep. And each computation is
 written once: no run of string-literal lines in ``queries/``, and no run
-of code lines in ``operators/``, may be pasted at a second place.
+of code lines anywhere in the package, may be pasted at a second place.
 """
 
 from __future__ import annotations
@@ -18,8 +18,8 @@ import duckdb
 from odbc2parquet_spark.catalog import TABLES, table_path
 from odbc2parquet_spark.queries import ORACLES
 
-QUERIES_DIR = Path(__file__).resolve().parent.parent / "odbc2parquet_spark" / "queries"
-OPERATORS_DIR = QUERIES_DIR.parent / "operators"
+PACKAGE_DIR = Path(__file__).resolve().parent.parent / "odbc2parquet_spark"
+QUERIES_DIR = PACKAGE_DIR / "queries"
 WINDOW = 10
 
 
@@ -81,26 +81,12 @@ def test_no_oracle_sql_is_pasted_twice():
     )
 
 
-# Code runs that repeat today, keyed by the top-level definitions holding
-# the later and the earlier copy. Each is a candidate for a shared helper;
-# a new copy is not added here but folded.
+# Code runs that repeat, keyed by the top-level definitions holding the
+# later and the earlier copy. Only a parameter list shared by two different
+# algorithms belongs here: a repeated computation is folded into a helper.
 COPIES_ALLOWED = {
-    ("attribution.py:journey_occupancy", "attribution.py:markov_removal_effect"):
-        "same parameter list and journey_transitions call",
-    ("dedup.py:word_shingle_stream", "dedup.py:word_shingles"):
-        "same signature and shingle expression; one is distinct, one a stream",
-    ("sampling.py:temperature_sample", "sampling.py:mixture_sample"):
-        "same threshold join tail",
-    ("similarity.py:ivf_silhouette", "similarity.py:ivf_assign"):
-        "same signature and centroid scoring",
-    ("similarity.py:ivf_search", "similarity.py:brute_force_topk"):
-        "same top-k window tail",
-    ("similarity.py:ivf_pq_residual_search", "similarity.py:ivf_pq_search"):
-        "same parameter list",
-    ("text.py:kneser_ney_scores", "text.py:bigram_lm_scores"):
-        "same bigram explode",
-    ("text.py:bigram_lm_scores_cross", "text.py:kneser_ney_scores"):
-        "same per-document average tail",
+    ("operators/similarity.py:ivf_pq_residual_search", "operators/similarity.py:ivf_pq_search"):
+        "parameter list only: raw-vector and residual IVF-PQ share their knobs",
 }
 
 
@@ -124,8 +110,9 @@ def _code_lines(path: Path) -> list[tuple[int, str, str]]:
     for node in tree.body:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
             owner.update(dict.fromkeys(range(node.lineno, node.end_lineno + 1), node.name))
+    name = path.relative_to(PACKAGE_DIR).as_posix()
     return [
-        (i, line.strip(), f"{path.name}:{owner.get(i, '<module>')}")
+        (i, line.strip(), f"{name}:{owner.get(i, '<module>')}")
         for i, line in enumerate(src.splitlines(), 1)
         if line.strip() and not line.strip().startswith("#") and i not in docstring
     ]
@@ -134,15 +121,16 @@ def _code_lines(path: Path) -> list[tuple[int, str, str]]:
 def repeated_code() -> list[tuple[str, str, tuple[str, str]]]:
     """(later ``file:line``, earlier ``file:line``, (later definition,
     earlier definition)) for the first window of every run of code lines
-    in ``operators/`` that appears at two places."""
+    in the package that appears at two places."""
     first: dict[tuple[str, ...], tuple[str, str]] = {}
     repeats = []
-    for path in sorted(OPERATORS_DIR.glob("*.py")):
+    for path in sorted(PACKAGE_DIR.rglob("*.py")):
         lines = _code_lines(path)
+        name = path.relative_to(PACKAGE_DIR).as_posix()
         prev_repeated = False
         for k in range(len(lines) - WINDOW + 1):
             window = tuple(text for _, text, _ in lines[k : k + WINDOW])
-            here = (f"{path.name}:{lines[k][0]}", lines[k][2])
+            here = (f"{name}:{lines[k][0]}", lines[k][2])
             repeated = window in first
             if repeated and not prev_repeated:
                 there = first[window]
@@ -153,10 +141,10 @@ def repeated_code() -> list[tuple[str, str, tuple[str, str]]]:
     return repeats
 
 
-def test_no_operator_code_is_pasted_twice():
+def test_no_package_code_is_pasted_twice():
     new = [(a, b) for a, b, key in repeated_code() if key not in COPIES_ALLOWED]
     assert not new, (
-        f"{WINDOW} code lines repeat in operators/; share a helper instead: "
+        f"{WINDOW} code lines repeat in the package; share a helper instead: "
         + ", ".join(f"{a} repeats {b}" for a, b in new)
     )
 

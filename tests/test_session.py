@@ -141,7 +141,7 @@ CASES = ("missing", "garbage", "truncated", "unwritable", "mismatched")
 
 def _env(cache) -> dict:
     env = dict(os.environ, XDG_CACHE_HOME=str(cache), PYTHONPATH=REPO, SPARK_GRAFT_CPUS="2")
-    for k in ("SPARK_GRAFT_DRIVER_MEM", "SPARK_GRAFT_EXTRA_CONF", "SPARK_GRAFT_CODECACHE_MB", "SPARK_CONF_DIR"):
+    for k in ("SPARK_GRAFT_DRIVER_MEM", "SPARK_CONF_DIR"):
         env.pop(k, None)
     return env
 
