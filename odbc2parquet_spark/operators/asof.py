@@ -36,7 +36,6 @@ def asof_join(
     key: str,
     left_ts: str,
     right_ts: str,
-    right_prefix: str = "r_",
     direction: str = "backward",
 ) -> DataFrame:
     """Left as-of join: every ``left`` row + the latest ``right`` row with
@@ -94,9 +93,9 @@ def asof_join(
     carried = unioned.withColumn("__match", match)
     out_cols = [F.col(f"__l_{c}").alias(c) for c in l_cols]
     out_cols.append(
-        F.col("__match").getField(right_ts).alias(f"{right_prefix}{right_ts}")
+        F.col("__match").getField(right_ts).alias(f"r_{right_ts}")
     )
     out_cols.extend(
-        F.col("__match").getField(c).alias(f"{right_prefix}{c}") for c in r_payload
+        F.col("__match").getField(c).alias(f"r_{c}") for c in r_payload
     )
     return carried.filter(F.col("__side") == l_side).select(*out_cols)

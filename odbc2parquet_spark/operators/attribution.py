@@ -35,16 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def linear_attribution(
-    conversions: DataFrame,
-    touches: DataFrame,
-    key: str,
-    channel_col: str = "channel",
-    conv_id_col: str = "conv_id",
-    value_col: str = "value",
-    ts_col: str = "ts",
-    window: str = "7 days",
-) -> DataFrame:
+def linear_attribution(conversions: DataFrame, touches: DataFrame, key: str) -> DataFrame:
     """Credit rows for the linear attribution model.
 
     ``conversions`` needs (key, conv_id_col, ts_col, value_col);
@@ -60,21 +51,21 @@ def linear_attribution(
     """
     c = conversions.select(
         F.col(key).alias("_k"),
-        F.col(conv_id_col).alias("conv_id"),
-        F.col(ts_col).alias("_cts"),
-        F.col(value_col).alias("value"),
+        F.col("conv_id"),
+        F.col("ts").alias("_cts"),
+        F.col("value"),
     )
     t = touches.select(
         F.col(key).alias("_k"),
-        F.col(ts_col).alias("_tts"),
-        F.col(channel_col).alias("channel"),
+        F.col("ts").alias("_tts"),
+        F.col("channel"),
     )
     pairs = c.join(
         t,
         on=[
             c["_k"] == t["_k"],
             t["_tts"] <= c["_cts"],
-            t["_tts"] >= c["_cts"] - F.expr(f"INTERVAL {window}"),
+            t["_tts"] >= c["_cts"] - F.expr("INTERVAL 7 days"),
         ],
         how="inner",
     )
@@ -96,10 +87,6 @@ def shapley_attribution(
     touches: DataFrame,
     key: str,
     channels: list[str],
-    channel_col: str = "channel",
-    conv_id_col: str = "conv_id",
-    ts_col: str = "ts",
-    window: str = "7 days",
 ) -> DataFrame:
     """EXACT Shapley-value attribution over the channel coalition lattice.
 
@@ -146,20 +133,20 @@ def shapley_attribution(
 
     c = conversions.select(
         F.col(key).alias("_k"),
-        F.col(conv_id_col).alias("conv_id"),
-        F.col(ts_col).alias("_cts"),
+        F.col("conv_id"),
+        F.col("ts").alias("_cts"),
     )
     t = touches.select(
         F.col(key).alias("_k"),
-        F.col(ts_col).alias("_tts"),
-        F.col(channel_col).alias("_ch"),
+        F.col("ts").alias("_tts"),
+        F.col("channel").alias("_ch"),
     )
     pairs = c.join(
         t,
         on=[
             c["_k"] == t["_k"],
             t["_tts"] <= c["_cts"],
-            t["_tts"] >= c["_cts"] - F.expr(f"INTERVAL {window}"),
+            t["_tts"] >= c["_cts"] - F.expr("INTERVAL 7 days"),
         ],
         how="left",
     )
@@ -218,15 +205,7 @@ def shapley_attribution(
     )
 
 
-def journey_transitions(
-    events: DataFrame,
-    channels: tuple[str, ...] = ("click", "view", "signup"),
-    conv_type: str = "purchase",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
+def journey_transitions(events: DataFrame) -> DataFrame:
     """(src, dst, cnt): first-order journey transition counts — the input
     to Markov-model attribution. Each user's event stream splits into
     JOURNEYS at conversion events (a conversion closes the journey it
@@ -240,34 +219,34 @@ def journey_transitions(
 
     Scale shape: two per-user windows (journey split + sequence LEAD)
     over only channel/conversion rows, then one (src, dst) count that
-    collapses map-side to at most (|channels|+1)^2 rows. The per-user
-    windows are the same sessionize shape every funnel query uses —
+    collapses map-side to at most 20 rows (4 sources x 5 destinations).
+    The per-user windows are the same sessionize shape every funnel query uses —
     keyed by user, never global.
     """
     ev = events.filter(
-        F.col(type_col).isin(*channels, conv_type)
+        F.col("event_type").isin("click", "view", "signup", "purchase")
     ).select(
-        F.col(user_col).alias("u"),
-        F.col(ts_col).alias("ts"),
-        F.col(id_col).alias("eid"),
-        F.col(type_col).alias("et"),
+        F.col("user_id").alias("u"),
+        F.col("ts"),
+        F.col("event_id").alias("eid"),
+        F.col("event_type").alias("et"),
     )
     uw = Window.partitionBy("u").orderBy("ts", "eid")
     j = ev.withColumn(
         "jid",
         F.coalesce(
-            F.sum(F.when(F.col("et") == conv_type, 1).otherwise(0)).over(
+            F.sum(F.when(F.col("et") == "purchase", 1).otherwise(0)).over(
                 uw.rowsBetween(Window.unboundedPreceding, -1)
             ),
             F.lit(0),
         ),
     )
     jp = j.groupBy("u", "jid").agg(
-        F.max(F.when(F.col("et") == conv_type, 1).otherwise(0)).alias("has_conv")
+        F.max(F.when(F.col("et") == "purchase", 1).otherwise(0)).alias("has_conv")
     )
     jw = Window.partitionBy("u", "jid").orderBy("ts", "eid")
     seq = (
-        j.filter(F.col("et") != conv_type)
+        j.filter(F.col("et") != "purchase")
         .withColumn("rn", F.row_number().over(jw))
         .withColumn("nxt", F.lead("et", 1).over(jw))
     )
@@ -302,38 +281,19 @@ def journey_transitions(
     )
 
 
-def _micro_weights(
-    events: DataFrame,
-    channels: tuple[str, ...],
-    conv_type: str,
-    user_col: str,
-    ts_col: str,
-    type_col: str,
-    id_col: str,
-) -> list[tuple[str, str, int]]:
+def _micro_weights(events: DataFrame) -> list[tuple[str, str, int]]:
     """(src, dst, w) on the driver: the :func:`journey_transitions` table
-    (at most (|channels|+2)^2 rows) with each count turned into the
+    (at most 20 rows) with each count turned into the
     integer micro-unit weight w = cnt*10^6 div out(src), out-degrees
     taken over the full graph."""
-    rows = journey_transitions(
-        events, channels, conv_type, user_col, ts_col, type_col, id_col
-    ).collect()
+    rows = journey_transitions(events).collect()
     out_n: dict[str, int] = {}
     for r in rows:
         out_n[r.src] = out_n.get(r.src, 0) + r.cnt
     return [(r.src, r.dst, r.cnt * 1_000_000 // out_n[r.src]) for r in rows]
 
 
-def markov_removal_effect(
-    events: DataFrame,
-    channels: tuple[str, ...] = ("click", "view", "signup"),
-    conv_type: str = "purchase",
-    iterations: int = 8,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
+def markov_removal_effect(events: DataFrame) -> DataFrame:
     """(removed, p_start_micro, removal_effect6): Markov-chain removal-
     effect attribution — the third classical model next to linear
     (ev_attribution) and Shapley (ev_shapley_attribution). The journey
@@ -349,16 +309,15 @@ def markov_removal_effect(
     div out(src) (out-degrees from the FULL graph, the standard removal
     construction), absorption probability iterates in 10^12 micro-units
     — p'(s) = sum over edges of (w * pval(dst)) div 10^6 with pval(conv)
-    = 10^12, pval(null) = 0 — a fixed ``iterations``-step truncation of
+    = 10^12, pval(null) = 0 — a fixed 8-step truncation of
     the absorption series, every step exact int64 (w <= 1e6, p <= 1e12:
     products <= 1e18). Both the division floor and the truncation depth
     are part of the spec the oracle replays.
 
-    Scale shape: the event stream collapses to a <= (|channels|+1)^2-row
-    transition table (journey_transitions); everything after — the 4
-    scenario remaps and the fixed-point rounds — runs on scenario x
-    state frames of a few dozen rows. No driver data access; rounds are
-    fixed so the plan is static.
+    Scale shape: the event stream collapses to a <= 20-row transition
+    table (journey_transitions), which is collected to the driver
+    (:func:`_micro_weights`); the 4 scenario remaps and the 8 rounds of
+    the chain then run there in Python over a few dozen values.
     """
     # Round 11: the chain below runs ON THE DRIVER (a bounded pull, like
     # the PQ codebooks and the BPE local loop) — the iterated-join form
@@ -366,11 +325,9 @@ def markov_removal_effect(
     # round-trips for microseconds of math (suite median 2.9s -> ~1.6s;
     # the remaining cost is journey_transitions itself, which stays
     # distributed at any corpus size).
-    wlist = _micro_weights(
-        events, channels, conv_type, user_col, ts_col, type_col, id_col
-    )
+    wlist = _micro_weights(events)
     results: list[tuple[str, int]] = []
-    for removed in ("none", *channels):
+    for removed in ("none", "click", "view", "signup"):
         edges = [
             (s, "null" if d == removed else d, w)
             for (s, d, w) in wlist
@@ -378,7 +335,7 @@ def markov_removal_effect(
         ]
         states = {s for s, _, _ in edges}
         p = {s: 0 for s in states}
-        for _ in range(iterations):
+        for _ in range(8):
             nxt = {s: 0 for s in states}
             for s, d, w in edges:
                 pval = (
@@ -437,21 +394,12 @@ def markov_removal_effect(
     return spark.createDataFrame(out_rows, schema)
 
 
-def journey_occupancy(
-    events: DataFrame,
-    channels: tuple[str, ...] = ("click", "view", "signup"),
-    conv_type: str = "purchase",
-    iterations: int = 8,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
+def journey_occupancy(events: DataFrame) -> DataFrame:
     """(state, visits_micro): expected VISITS per journey state under the
     first-order chain — the fundamental-matrix row for 'start' that
     completes the Markov attribution pair: removal effect prices what is
     LOST without a channel; occupancy says how much traffic flows
-    THROUGH it (media planners read both). Truncated at ``iterations``
+    THROUGH it (media planners read both). Truncated at 8
     steps: v_0 = e_start, v_{k+1}(s') = sum_s v_k(s) * P(s -> s') over
     transient states, occupancy = sum_k v_k — all in the exact integer
     micro-units of :func:`markov_removal_effect` (weights cnt*10^6 div
@@ -461,7 +409,7 @@ def journey_occupancy(
     so each round references only its predecessor — the linear-chain
     form an unrolled SQL oracle can replay without exponential CTE
     re-expansion. Scale shape: identical to the removal-effect chain —
-    the corpus collapses to the <= (channels+1)^2-row transition table
+    the corpus collapses to the <= 20-row transition table
     before any algebra."""
     # Same round-11 driver-side rewrite as markov_removal_effect: the
     # truncated fundamental-matrix series is exact int64 arithmetic over
@@ -470,9 +418,7 @@ def journey_occupancy(
     # scheduler overhead (suite median 2.65s -> ~1.6s).
     wlist = [
         (s, d, w)
-        for s, d, w in _micro_weights(
-            events, channels, conv_type, user_col, ts_col, type_col, id_col
-        )
+        for s, d, w in _micro_weights(events)
         if d not in ("conv", "null")
     ]
     states = sorted(
@@ -480,7 +426,7 @@ def journey_occupancy(
     )
     v = {s: (10**12 if s == "start" else 0) for s in states}
     o = dict(v)
-    for _ in range(iterations):
+    for _ in range(8):
         nxt = {s: 0 for s in states}
         for s, d, w in wlist:
             nxt[d] += v[s] * w // 1_000_000

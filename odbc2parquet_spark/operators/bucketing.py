@@ -33,7 +33,6 @@ def order_bucket_col(
     df: DataFrame,
     order_col: str,
     num_buckets: int,
-    rel_err: float = 0.01,
     apply_col: str | None = None,
 ) -> Column:
     """A pure-expression bucket column, monotone in ``order_col``.
@@ -81,7 +80,7 @@ def order_bucket_col(
     if isinstance(dt, (NumericType, TimestampType, DateType, BooleanType)):
         probs = [i / num_buckets for i in range(1, num_buckets)]
         key = _as_double(F.col(order_col), dt)
-        bnds = df.select(key.alias("_k_")).approxQuantile("_k_", probs, rel_err)
+        bnds = df.select(key.alias("_k_")).approxQuantile("_k_", probs, 0.01)
         uniq: list = sorted({b for b in bnds if b is not None})
         lits = [F.lit(float(v)) for v in uniq]
     else:
@@ -133,7 +132,7 @@ def release_local_checkpoint(df: DataFrame) -> None:
 
 
 def bucket_offsets(
-    with_pid: DataFrame, sum_cols: list[str], pid_col: str = "_pid_"
+    with_pid: DataFrame, sum_cols: list[str]
 ) -> tuple[dict[str, dict[int, int]], dict[str, int]]:
     """Pass 1 of the two-pass scheme: per-bucket sums of ``sum_cols``
     (``num_buckets`` rows to the driver), folded into EXCLUSIVE prefix
@@ -141,13 +140,13 @@ def bucket_offsets(
     ``({col: {bucket: offset}}, {col: total})``; empty input gives
     ``({col: {}}, {col: 0})``.
     """
-    rows = with_pid.groupBy(pid_col).agg(
+    rows = with_pid.groupBy("_pid_").agg(
         *[F.sum(c).alias(c) for c in sum_cols]
     ).collect()
     offsets: dict[str, dict[int, int]] = {c: {} for c in sum_cols}
     acc = {c: 0 for c in sum_cols}
-    for r in sorted(rows, key=lambda r: r[pid_col]):
+    for r in sorted(rows, key=lambda r: r["_pid_"]):
         for c in sum_cols:
-            offsets[c][r[pid_col]] = acc[c]
+            offsets[c][r["_pid_"]] = acc[c]
             acc[c] += r[c] or 0
     return offsets, acc

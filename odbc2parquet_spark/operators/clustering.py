@@ -100,7 +100,7 @@ def zorder_key(
     )
     cx = cell_sql(x_col, "_mnx", "_mxx", bits)
     cy = cell_sql(y_col, "_mny", "_mxy", bits)
-    z = zorder_sql(cx, cy, bits, dialect="spark")
+    z = zorder_sql(cx, cy, bits)
     return (
         df.crossJoin(F.broadcast(stats))
         .withColumn("zkey", F.expr(z))

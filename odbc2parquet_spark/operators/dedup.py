@@ -31,36 +31,30 @@ from odbc2parquet_spark.operators.similarity import (
 # ---------------------------------------------------------------- exact
 
 
-def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Group by content hash; one row per distinct content.
 
     Returns (content_hash, n_copies, keep_id) — keep-first policy
     (min id wins). Drop rows with n_copies>1 joined back to prune.
     """
-    return docs.groupBy(F.md5(F.col(text_col)).alias("content_hash")).agg(
-        F.count("*").alias("n_copies"), F.min(id_col).alias("keep_id")
+    return docs.groupBy(F.md5(F.col("text")).alias("content_hash")).agg(
+        F.count("*").alias("n_copies"), F.min("doc_id").alias("keep_id")
     )
 
 
-def drop_exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def drop_exact_duplicates(docs: DataFrame) -> DataFrame:
     """Keep only the first (min-id) copy of each distinct text."""
-    keepers = exact_duplicates(docs, text_col, id_col).select(
-        F.col("keep_id").alias(id_col)
+    keepers = exact_duplicates(docs).select(
+        F.col("keep_id").alias("doc_id")
     )
-    return docs.join(keepers, id_col, "left_semi")
+    return docs.join(keepers, "doc_id", "left_semi")
 
 
 # ------------------------------------------------------------- shingles
 
 
-def word_shingles(
-    docs: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    spread: bool = False,
-) -> DataFrame:
-    """Distinct n-word shingles per document: (id, g).
+def word_shingles(docs: DataFrame, spread: bool = False) -> DataFrame:
+    """Distinct 3-word shingles per document: (id, g).
 
     :func:`word_shingle_stream` plus a distinct: a shuffle on (id, g) —
     unavoidable for set semantics, partially aggregated map-side.
@@ -73,7 +67,7 @@ def word_shingles(
     the cores (dd_band_curve 3.11->3.43, tx_curation_delta 6.27->7.12 in
     the round-12 interleaved A/B).
     """
-    return word_shingle_stream(docs, n, text_col, id_col, spread).distinct()
+    return word_shingle_stream(docs, spread).distinct()
 
 
 # ------------------------------------------------------- n-gram Jaccard
@@ -113,7 +107,7 @@ def jaccard_pairs(shingles: DataFrame, threshold: float) -> DataFrame:
 MINHASH_MOD = 1 << 60
 
 
-def minhash_signatures(shingles: DataFrame, num_hashes: int = 8) -> DataFrame:
+def minhash_signatures(shingles: DataFrame) -> DataFrame:
     """(id, mh0..mh{k-1}) — one groupBy, k min-aggregates, map-side partials.
 
     Hash family via the two-hash composition (Kirsch-Mitzenmacher):
@@ -127,19 +121,13 @@ def minhash_signatures(shingles: DataFrame, num_hashes: int = 8) -> DataFrame:
     h2 = F.conv(F.substring(hexd, 16, 15), 16, 10).cast("long")
     aggs = [
         F.min((h1 + F.lit(j) * h2) % F.lit(MINHASH_MOD)).alias(f"mh{j}")
-        for j in range(num_hashes)
+        for j in range(8)
     ]
     return shingles.groupBy("id").agg(*aggs)
 
 
-def word_shingle_stream(
-    docs: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    spread: bool = False,
-) -> DataFrame:
-    """Non-distinct n-word shingles per document: (id, g).
+def word_shingle_stream(docs: DataFrame, spread: bool = False) -> DataFrame:
+    """Non-distinct 3-word shingles per document: (id, g).
 
     Built-ins only: split + transform over an index sequence + explode
     (``spread`` as in :func:`word_shingles`).
@@ -156,20 +144,20 @@ def word_shingle_stream(
     the digests per hash function — so explode + partial-agg is the right
     physical shape, not arrays.)
     """
-    ws = F.split(F.col(text_col), " ")
-    parts = [f"ws[i - 1 + {k}]" for k in range(n)]
+    ws = F.split(F.col("text"), " ")
+    parts = [f"ws[i - 1 + {k}]" for k in range(3)]
     # NB: Spark's sequence(1, 0) yields DESCENDING [1, 0], not empty —
     # short documents must short-circuit to an empty shingle set.
     shingle_expr = (
-        f"CASE WHEN size(ws) < {n} THEN array() ELSE "
-        f"transform(sequence(1, size(ws) - {n - 1}), "
+        "CASE WHEN size(ws) < 3 THEN array() ELSE "
+        "transform(sequence(1, size(ws) - 2), "
         f"i -> concat_ws(' ', {', '.join(parts)})) END"
     )
     from odbc2parquet_spark.catalog import spread_scan
 
     return (
         (spread_scan(docs) if spread else docs)
-        .select(F.col(id_col).alias("id"), ws.alias("ws"))
+        .select(F.col("doc_id").alias("id"), ws.alias("ws"))
         .select("id", F.explode(F.expr(shingle_expr)).alias("g"))
     )
 
@@ -213,16 +201,7 @@ def lsh_candidate_pairs_multi(
     )
 
 
-def minhash_near_duplicates(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    num_hashes: int = 8,
-    bands: int = 4,
-    rows_per_band: int = 2,
-    shingle_words: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def minhash_near_duplicates(docs: DataFrame) -> DataFrame:
     """Full near-dup pipeline: shingle -> sign -> band -> candidates ->
     exact-Jaccard verify (verification joins shingles only for candidate
     pairs, so the quadratic step is bounded by LSH recall).
@@ -242,15 +221,14 @@ def minhash_near_duplicates(
     from odbc2parquet_spark import cachereg
 
     sh = cachereg.track(
-        word_shingles(docs, shingle_words, text_col, id_col, spread=True).persist(
+        word_shingles(docs, spread=True).persist(
             StorageLevel.MEMORY_AND_DISK
         )
     )
     sig = minhash_signatures(
-        word_shingle_stream(docs, shingle_words, text_col, id_col, spread=True),
-        num_hashes,
+        word_shingle_stream(docs, spread=True),
     )
-    cand = lsh_candidate_pairs(sig, bands, rows_per_band)
+    cand = lsh_candidate_pairs(sig)
     sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
     a = sh.select(F.col("id").alias("id_a"), "g")
     b = sh.select(F.col("id").alias("id_b"), "g")
@@ -264,7 +242,7 @@ def minhash_near_duplicates(
         common.join(sizes.select(F.col("id").alias("id_a"), F.col("n").alias("n_a")), "id_a")
         .join(sizes.select(F.col("id").alias("id_b"), F.col("n").alias("n_b")), "id_b")
         .filter(
-            F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")) >= F.lit(threshold)
+            F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")) >= F.lit(0.5)
         )
         .select("id_a", "id_b", "common", "n_a", "n_b")
     )
@@ -273,7 +251,7 @@ def minhash_near_duplicates(
 # -------------------------------------------------------------- SimHash
 
 
-def simhash(docs: DataFrame, bits: int = 32, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
     """Unweighted SimHash over distinct words: (id, simhash).
 
     bit_i(doc) = majority sign over words of bit i of h(word); the integer
@@ -337,7 +315,7 @@ def simhash(docs: DataFrame, bits: int = 32, text_col: str = "text", id_col: str
             )
 
     return docs.select(
-        F.col(id_col).cast("long").alias("id"), F.col(text_col)
+        F.col("doc_id").cast("long").alias("id"), F.col("text")
     ).mapInArrow(sig_batches, "id long, simhash long")
 
 
@@ -385,12 +363,7 @@ def simhash_banded_pairs(
 # ------------------------------------------------------ incremental dedup
 
 
-def incremental_exact_dedup(
-    new_docs: DataFrame,
-    existing: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def incremental_exact_dedup(new_docs: DataFrame, existing: DataFrame) -> DataFrame:
     """Dedupe an incoming batch against an already-deduped corpus.
 
     The production ingestion shape: the existing corpus contributes only
@@ -401,11 +374,11 @@ def incremental_exact_dedup(
     the hash (broadcast when the batch is small, shuffle otherwise —
     Spark picks).
     """
-    index = existing.select(F.md5(F.col(text_col)).alias("content_hash")).distinct()
-    batch = new_docs.withColumn("content_hash", F.md5(F.col(text_col)))
+    index = existing.select(F.md5(F.col("text")).alias("content_hash")).distinct()
+    batch = new_docs.withColumn("content_hash", F.md5(F.col("text")))
     batch_keepers = batch.join(
-        batch.groupBy("content_hash").agg(F.min(id_col).alias(id_col)),
-        [id_col, "content_hash"],
+        batch.groupBy("content_hash").agg(F.min("doc_id").alias("doc_id")),
+        ["doc_id", "content_hash"],
         "left_semi",
     )
     return batch_keepers.join(index, "content_hash", "left_anti").drop("content_hash")
@@ -414,13 +387,6 @@ def incremental_exact_dedup(
 def incremental_minhash_dedup(
     existing: DataFrame,
     batch: DataFrame,
-    threshold: float = 0.5,
-    num_hashes: int = 8,
-    bands: int = 4,
-    rows_per_band: int = 2,
-    shingle_words: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_bucket: int = 1000,
 ) -> DataFrame:
     """Ingestion-time near-dup gate: batch docs with NO verified MinHash
@@ -429,7 +395,7 @@ def incremental_minhash_dedup(
     is of :func:`exact_duplicates`.
 
     Scale shape: the existing corpus reduces to its band-key INDEX
-    (``bands`` narrow rows per doc, buckets above ``max_bucket`` dropped
+    (4 narrow rows per doc, buckets above ``max_bucket`` dropped
     by :func:`cap_buckets`) — precompute it once, store it partitioned by
     (band, key), and each batch equi-joins it instead of re-scanning
     corpus text. Existing-side TEXT is touched only for the exact-Jaccard
@@ -442,18 +408,18 @@ def incremental_minhash_dedup(
     # (persisting only sh: 2.39s; tx_curation_delta 5.76 -> 7.34/6.44):
     # the redundant subtrees overlap across cores inside one job, while a
     # persist serializes the DAG behind a materialization barrier.
-    keys = _minhash_keys(bands, rows_per_band)
+    keys = _minhash_keys(4, 2)
 
     def band_rows(docs: DataFrame, id_name: str) -> DataFrame:
-        stream = word_shingle_stream(docs, shingle_words, text_col, id_col)
-        sig = minhash_signatures(stream, num_hashes)
+        stream = word_shingle_stream(docs)
+        sig = minhash_signatures(stream)
         return band_melt(sig, F.col("id"), keys).withColumnRenamed("vec_id", id_name)
 
     index = cap_buckets(band_rows(existing, "old_id"), ["band", "key"], max_bucket)
     cand = band_rows(batch, "new_id").join(index, ["band", "key"])
     cand = cand.select("new_id", "old_id").distinct()
-    sh_b = word_shingles(batch, shingle_words, text_col, id_col)
-    sh_e = word_shingles(existing, shingle_words, text_col, id_col)
+    sh_b = word_shingles(batch)
+    sh_e = word_shingles(existing)
     sizes_b = sh_b.groupBy("id").agg(F.count("*").alias("n_new"))
     sizes_e = sh_e.groupBy("id").agg(F.count("*").alias("n_old"))
     common = (
@@ -466,23 +432,17 @@ def incremental_minhash_dedup(
     dropped = (
         common.join(sizes_b.select(F.col("id").alias("new_id"), "n_new"), "new_id")
         .join(sizes_e.select(F.col("id").alias("old_id"), "n_old"), "old_id")
-        .filter(jaccard >= F.lit(threshold))
-        .select(F.col("new_id").alias(id_col))
+        .filter(jaccard >= F.lit(0.5))
+        .select(F.col("new_id").alias("doc_id"))
         .distinct()
     )
-    return batch.select(id_col).join(dropped, id_col, "left_anti")
+    return batch.select("doc_id").join(dropped, "doc_id", "left_anti")
 
 
-def repeated_ngram_stats(
-    docs: DataFrame,
-    n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_docs: int = 2,
-) -> DataFrame:
+def repeated_ngram_stats(docs: DataFrame, n: int = 8) -> DataFrame:
     """Substring-level duplication stats (the Lee et al. "Deduplicating
     Training Data Makes Language Models Better" signal): word n-grams
-    recurring across >= ``min_docs`` DISTINCT documents, reported per
+    recurring across >= 2 DISTINCT documents, reported per
     document as (doc_id, n_grams, n_dup_grams, dup_frac).
 
     Document-level dedup (MinHash/SimHash) misses boilerplate spans pasted
@@ -507,13 +467,13 @@ def repeated_ngram_stats(
         f"i -> substring(md5(concat_ws(' ', {', '.join(parts)})), 1, 16)) END"
     )
     grams = (
-        docs.select(F.col(id_col).alias("doc_id"), F.split(F.col(text_col), " ").alias("ws"))
+        docs.select(F.col("doc_id"), F.split(F.col("text"), " ").alias("ws"))
         .select("doc_id", F.explode(F.expr(gram_expr)).alias("g"))
     )
     cross_doc = (
         grams.groupBy("g")
         .agg(F.countDistinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= min_docs)
+        .filter(F.col("nd") >= 2)
         .select("g")
     )
     per_doc_total = grams.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
@@ -523,7 +483,7 @@ def repeated_ngram_stats(
         .agg(F.count("*").alias("n_dup_grams"))
     )
     return (
-        docs.select(F.col(id_col).alias("doc_id"))
+        docs.select(F.col("doc_id"))
         .join(per_doc_total, "doc_id", "left")
         .join(per_doc_dup, "doc_id", "left")
         .select(
@@ -539,7 +499,7 @@ def repeated_ngram_stats(
     )
 
 
-def simhash_weighted(docs: DataFrame, bits: int = 32, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash_weighted(docs: DataFrame) -> DataFrame:
     """TF-weighted SimHash: each word votes with its occurrence count
     (majority over tokens, not distinct types) — repeated words dominate
     the signature, which matches near-dup behavior on template-heavy text.
@@ -549,13 +509,13 @@ def simhash_weighted(docs: DataFrame, bits: int = 32, text_col: str = "text", id
     its multiplicity for free. (The previous explode + 32-aggregate
     groupBy shuffled every token row for the same integers.)
     """
-    ws = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
+    ws = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
     hs = F.transform(ws, lambda w: F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("long"))
-    prepared = docs.select(F.col(id_col).alias("id"), hs.alias("hs"))
-    masks = F.array(*[F.lit(1 << i) for i in range(bits)])
+    prepared = docs.select(F.col("doc_id").alias("id"), hs.alias("hs"))
+    masks = F.array(*[F.lit(1 << i) for i in range(32)])
     counts = F.aggregate(
         F.col("hs"),
-        F.array_repeat(F.lit(0), bits),
+        F.array_repeat(F.lit(0), 32),
         lambda acc, h: F.zip_with(
             acc, masks, lambda c, m: c + F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1)
         ),
@@ -583,9 +543,7 @@ def _bloom_positions(content_hash: F.Column) -> F.Column:
     )
 
 
-def bloom_build(
-    docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def bloom_build(docs: DataFrame) -> DataFrame:
     """Build a Bloom filter over document content as a DISTRIBUTED bitset:
     (word, bits) rows where word = position div 32 and bits is the bit_or
     of the member positions' bits.
@@ -598,7 +556,7 @@ def bloom_build(
     false positives possible, false negatives impossible).
     """
     pos = docs.select(
-        F.explode(_bloom_positions(F.md5(F.col(text_col)))).alias("p")
+        F.explode(_bloom_positions(F.md5(F.col("text")))).alias("p")
     )
     return (
         pos.select(
@@ -610,12 +568,7 @@ def bloom_build(
     )
 
 
-def bloom_probe(
-    batch: DataFrame,
-    bloom: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bloom_probe(batch: DataFrame, bloom: DataFrame) -> DataFrame:
     """Probe a batch against a built filter: (doc_id, maybe_dup).
 
     ``maybe_dup`` is true iff ALL k bits are set — guaranteed true for
@@ -625,38 +578,33 @@ def bloom_probe(
     doc and folds back with a min — one narrow pass, no corpus access.
     """
     pos = batch.select(
-        F.col(id_col),
-        F.explode(_bloom_positions(F.md5(F.col(text_col)))).alias("p"),
+        F.col("doc_id"),
+        F.explode(_bloom_positions(F.md5(F.col("text")))).alias("p"),
     ).select(
-        id_col,
+        "doc_id",
         (F.col("p") / 32).cast("long").alias("word"),
         F.expr("shiftleft(1L, cast(p % 32 as int))").alias("b"),
     )
     hit = (
         pos.join(F.broadcast(bloom), "word", "left_outer")
         .select(
-            id_col,
+            "doc_id",
             (F.coalesce(F.col("bits"), F.lit(0)).bitwiseAND(F.col("b")) == F.col("b"))
             .cast("int")
             .alias("set_"),
         )
     )
-    return hit.groupBy(id_col).agg(
+    return hit.groupBy("doc_id").agg(
         (F.min("set_") == 1).alias("maybe_dup")
     )
 
 
-def span_scrub(
-    docs: DataFrame,
-    n: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def span_scrub(docs: DataFrame) -> DataFrame:
     """Cross-document duplicate-SPAN removal (the transform half of Lee et
     al.'s substring dedup; :func:`repeated_ngram_stats` is the measure
-    half). Every word ``n``-gram occurring in >= 2 distinct documents keeps
+    half). Every word 5-gram occurring in >= 2 distinct documents keeps
     only its globally-first occurrence (min ``(doc_id, pos)``); every other
-    occurrence has its ``n`` covered token positions deleted from its
+    occurrence has its 5 covered token positions deleted from its
     document. Documents are reassembled from the surviving tokens in
     order. Emits ``(doc_id, n_tokens, n_removed, scrubbed_hash)`` — the
     hash certifies the exact surviving token sequence without shipping
@@ -669,25 +617,25 @@ def span_scrub(
     occurrence) with map-side partial min-of-struct; occurrences of
     duplicated grams join back on the gram hash (shuffle on a
     high-cardinality key, skew bounded by the occurrence cap of any one
-    span); covered positions explode <= n rows per duplicate occurrence;
+    span); covered positions explode <= 5 rows per duplicate occurrence;
     the per-document rebuild is one sort_array inside an aggregation
     buffer — no per-doc window, no global sort. At 100 TB every stage is
     a hash shuffle on gram or doc id; nothing is quadratic in corpus
     size and nothing returns to the driver.
     """
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "w"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), " ")).alias("pos", "w"),
     )
-    parts = [f"ws[i - 1 + {k}]" for k in range(n)]
+    parts = [f"ws[i - 1 + {k}]" for k in range(5)]
     gram_expr = (
-        f"CASE WHEN size(ws) < {n} THEN array() ELSE "
-        f"transform(sequence(1, size(ws) - {n - 1}), "
+        "CASE WHEN size(ws) < 5 THEN array() ELSE "
+        "transform(sequence(1, size(ws) - 4), "
         f"i -> substring(md5(concat_ws(' ', {', '.join(parts)})), 1, 16)) END"
     )
     grams = (
         docs.select(
-            F.col(id_col).alias("doc_id"), F.split(F.col(text_col), " ").alias("ws")
+            F.col("doc_id"), F.split(F.col("text"), " ").alias("ws")
         )
         .select("doc_id", F.posexplode(F.expr(gram_expr)).alias("pos", "g"))
         # duplicate-gram detection scans the FIRST 2^21 tokens of each
@@ -732,7 +680,7 @@ def span_scrub(
         )
         .select(
             "doc_id",
-            F.explode(F.expr(f"sequence(pos, pos + {n - 1})")).alias("rm_pos"),
+            F.explode(F.expr("sequence(pos, pos + 4)")).alias("rm_pos"),
         )
         .distinct()
     )
@@ -750,7 +698,7 @@ def span_scrub(
     )
     totals = toks.groupBy("doc_id").agg(F.count("*").cast("long").alias("n_tokens"))
     return (
-        docs.select(F.col(id_col).alias("doc_id"))
+        docs.select(F.col("doc_id"))
         .join(totals, "doc_id", "left")
         .join(kept_agg, "doc_id", "left")
         .select(
@@ -906,21 +854,15 @@ def prefix_jaccard_pairs(
     )
 
 
-def winnowing_fingerprints(
-    docs: DataFrame,
-    n: int = 3,
-    window: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def winnowing_fingerprints(docs: DataFrame) -> DataFrame:
     """(id, pos, h): WINNOWING fingerprints (Schleimer, Wilkerson &
-    Aiken, SIGMOD'03 — the MOSS algorithm): per position the n-word
-    gram's 48-bit md5 hash, then in every sliding window of ``window``
+    Aiken, SIGMOD'03 — the MOSS algorithm): per position the 3-word
+    gram's 48-bit md5 hash, then in every sliding window of 4
     consecutive positions select the MINIMUM hash, ties to the RIGHTMOST
     occurrence (the "robust winnowing" rule that makes selections stable
     under local edits). The guarantee: any shared substring of at least
-    window + n - 1 words yields at least one shared fingerprint, while
-    only ~2/(window+1) of positions are kept — the storage/recall dial
+    6 words (window + n - 1) yields at least one shared fingerprint, while
+    only ~2/5 (2/(window+1)) of positions are kept — the storage/recall dial
     plagiarism and code-clone detection run on.
 
     Exactness: the (hash asc, pos desc) argmin packs into one int64
@@ -933,16 +875,14 @@ def winnowing_fingerprints(
     per doc, every gram of arbitrarily long documents covered (see the
     block-boundary notes inline).
     """
-    w_ = Window.partitionBy("id", "block").orderBy("pos").rowsBetween(
-        1 - window, 0
-    )
+    w_ = Window.partitionBy("id", "block").orderBy("pos").rowsBetween(-3, 0)
     grams = docs.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.posexplode(
             F.expr(
-                f"CASE WHEN size(split({text_col}, ' ')) >= {n} THEN "
-                f"transform(sequence(1, size(split({text_col}, ' ')) - {n - 1}), "
-                f"i -> concat_ws(' ', slice(split({text_col}, ' '), i, {n}))) "
+                "CASE WHEN size(split(text, ' ')) >= 3 THEN "
+                "transform(sequence(1, size(split(text, ' ')) - 2), "
+                "i -> concat_ws(' ', slice(split(text, ' '), i, 3))) "
                 "ELSE array() END"
             )
         ).alias("pos", "g"),
@@ -978,36 +918,26 @@ def winnowing_fingerprints(
     ).distinct()
 
 
-def winnowing_pairs(
-    fingerprints: DataFrame,
-    min_shared: int = 2,
-    max_docs_per_fp: int = 64,
-) -> DataFrame:
+def winnowing_pairs(fingerprints: DataFrame, min_shared: int = 2) -> DataFrame:
     """(id_a, id_b, n_shared): document pairs sharing at least
     ``min_shared`` distinct winnowing fingerprint hashes — the MOSS
     match stage. Pairs come from similarity.capped_bucket_pairs with the
     hash as the bucket and the standard stop-fingerprint cap: a hash in
-    more than ``max_docs_per_fp`` docs (template/boilerplate mass) is
+    more than 64 docs (template/boilerplate mass) is
     dropped, since the window count over the distinct (id, h) rows is
     the per-fingerprint doc frequency."""
     fp = fingerprints.select(F.col("id").alias("vec_id"), "h").distinct()
     return (
-        capped_bucket_pairs(fp, ["h"], max_docs_per_fp)
+        capped_bucket_pairs(fp, ["h"], 64)
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
 
 
-def suffix_lcp_spans(
-    docs: DataFrame,
-    k_max: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_suffixes_per_bigram: int = 100_000,
-) -> DataFrame:
+def suffix_lcp_spans(docs: DataFrame) -> DataFrame:
     """(doc_id, max_dup_span): per document, the longest token span (capped
-    at ``k_max``) that also occurs in ANOTHER document — the suffix-array
+    at 16 tokens) that also occurs in ANOTHER document — the suffix-array
     method behind exact substring deduplication (Lee et al., "Deduplicating
     Training Data Makes Language Models Better": build the suffix array of
     the corpus, take the LCP of lexicographically adjacent suffixes from
@@ -1021,11 +951,10 @@ def suffix_lcp_spans(
     the suffix order is computed per (token1, token2) group — a keyed
     window, never a single-partition sort; cross-group adjacencies can
     only have LCP <= 1 and are irrelevant by construction. Suffixes are
-    truncated to ``k_max`` tokens (reported spans saturate there — the
-    standard bounded-comparison trick; raise k_max to resolve longer
-    spans). Bigram groups holding more than ``max_suffixes_per_bigram``
-    suffixes are boilerplate mass and dropped (the same stop-key rule as
-    winnowing_pairs' max_docs_per_fp), keeping the window skew-bounded.
+    truncated to 16 tokens (reported spans saturate there — the
+    standard bounded-comparison trick). Bigram groups holding more than
+    100,000 suffixes are boilerplate mass and dropped (the same stop-key
+    rule as winnowing_pairs' 64-document cap), keeping the window skew-bounded.
 
     Correctness of adjacent-only credit: all suffixes sharing a token
     prefix of length L form a contiguous block in the (array-lexicographic)
@@ -1038,7 +967,7 @@ def suffix_lcp_spans(
     Suffixes carry 60-bit md5 TOKEN HASHES, not the tokens: the
     contiguous-block property holds for any per-token injective mapping
     (the sort is over a different total order, but prefix blocks are
-    still contiguous), the k_max-long fixed-width int64 payload shrinks
+    still contiguous), the 16-long fixed-width int64 payload shrinks
     the per-bigram-group sort shuffle vs variable-length strings
     (measured 2.26s -> 1.97s at sf0.1; the second decade is bounded by
     materializing the suffix arrays themselves, not the sort payload),
@@ -1052,10 +981,10 @@ def suffix_lcp_spans(
         "AS BIGINT))"
     )
     ws = docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         F.expr(
             tok_hash.replace(
-                "list", f"filter(split({text_col}, ' '), x -> x != '')"
+                "list", "filter(split(text, ' '), x -> x != '')"
             )
         ).alias("ws"),
     )
@@ -1067,7 +996,7 @@ def suffix_lcp_spans(
             F.expr(
                 f"CASE WHEN size(ws) < 2 THEN array() ELSE "
                 f"transform(sequence(1, size(ws) - 1), "
-                f"i -> slice(ws, i, {k_max})) END"
+                "i -> slice(ws, i, 16)) END"
             )
         ).alias("s"),
     ).select(
@@ -1079,7 +1008,7 @@ def suffix_lcp_spans(
     grp = Window.partitionBy("k1", "k2")
     bounded = (
         suf.withColumn("grp_n", F.count(F.lit(1)).over(grp))
-        .filter(F.col("grp_n") <= max_suffixes_per_bigram)
+        .filter(F.col("grp_n") <= 100_000)
         .drop("grp_n")
     )
     w = Window.partitionBy("k1", "k2").orderBy("s")

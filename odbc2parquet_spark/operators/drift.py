@@ -113,22 +113,17 @@ def prefix_sums(
     return out.drop("_pid_", *[f"_off_{c}_" for c in sum_cols])
 
 
-def psi_drift(
-    df: DataFrame,
-    value_col: str,
-    in_b,
-    n_bins: int = 10,
-) -> DataFrame:
+def psi_drift(df: DataFrame, value_col: str, in_b) -> DataFrame:
     """Population Stability Index between two populations of ``value_col``
     (rows where boolean column expression ``in_b`` holds are population B,
     the rest population A — e.g. this week's ingest vs the reference
     snapshot).
 
-    Bins are ``n_bins`` fixed-width intervals of the pooled [min, max]
+    Bins are 10 fixed-width intervals of the pooled [min, max]
     range — a pure map expression once the 1-row (min, max) aggregate is
     broadcast, so binning rides the scan. Counts per (bin, population)
     partial-aggregate map-side; every downstream term operates on
-    ``n_bins`` rows. Laplace smoothing ((n+1)/(N+n_bins)) keeps empty
+    10 rows. Laplace smoothing ((n+1)/(N+10)) keeps empty
     bins finite and is mirrored in the oracle. Empty bins still emit a
     row (bins come from a 1-row sequence explode, observed counts LEFT
     join on), because their smoothed terms contribute to the index.
@@ -155,9 +150,9 @@ def psi_drift(
             F.least(
                 F.floor(
                     (F.col("v") - F.col("mn"))
-                    / ((F.col("mx") - F.col("mn")) / F.lit(float(n_bins)))
+                    / ((F.col("mx") - F.col("mn")) / F.lit(10.0))
                 ),
-                F.lit(n_bins - 1),
+                F.lit(9),
             )
         )
         .cast("long")
@@ -169,15 +164,15 @@ def psi_drift(
         F.sum(F.when(F.col("_b_"), 1).otherwise(0)).cast("long").alias("n_b"),
     )
     grid = stats.select(
-        F.explode(F.sequence(F.lit(0), F.lit(n_bins - 1))).alias("bin"),
+        F.explode(F.sequence(F.lit(0), F.lit(9))).alias("bin"),
         "n_a_tot",
         "n_b_tot",
     ).select(F.col("bin").cast("long").alias("bin"), "n_a_tot", "n_b_tot")
     pa = (F.col("n_a") + 1).cast("double") / (
-        F.col("n_a_tot") + F.lit(n_bins)
+        F.col("n_a_tot") + F.lit(10)
     ).cast("double")
     pb = (F.col("n_b") + 1).cast("double") / (
-        F.col("n_b_tot") + F.lit(n_bins)
+        F.col("n_b_tot") + F.lit(10)
     ).cast("double")
     return (
         grid.join(counts, "bin", "left")
@@ -197,12 +192,7 @@ def psi_drift(
     )
 
 
-def ks_two_sample(
-    df: DataFrame,
-    value_col: str,
-    in_b,
-    num_partitions: int = 32,
-) -> DataFrame:
+def ks_two_sample(df: DataFrame, value_col: str, in_b) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov statistic: D = max over x of
     |F_a(x) - F_b(x)| between the two populations of ``value_col``.
 
@@ -229,7 +219,6 @@ def ks_two_sample(
         per_value,
         ["v"],
         ["na", "nb"],
-        num_partitions,
         boundary_source=(df.select(F.col(value_col).alias("_v_")), "_v_"),
         with_totals=True,
     )
@@ -250,12 +239,7 @@ def ks_two_sample(
     )
 
 
-def rank_auc(
-    df: DataFrame,
-    score_col: str,
-    is_pos,
-    num_partitions: int = 32,
-) -> DataFrame:
+def rank_auc(df: DataFrame, score_col: str, is_pos) -> DataFrame:
     """ROC-AUC of ``score_col`` ranking the positive class (rows where
     ``is_pos`` holds) — the Mann-Whitney U statistic with exact
     average-rank tie handling, in pure integer arithmetic.
@@ -280,7 +264,6 @@ def rank_auc(
         per_score,
         ["s"],
         ["nn"],
-        num_partitions,
         boundary_source=(df.select(F.col(score_col).alias("_s_")), "_s_"),
     )
     u2 = cum.agg(
@@ -303,11 +286,7 @@ def rank_auc(
     )
 
 
-def gini_concentration(
-    df: DataFrame,
-    value_col: str,
-    num_partitions: int = 32,
-) -> DataFrame:
+def gini_concentration(df: DataFrame, value_col: str) -> DataFrame:
     """Gini coefficient of the ``value_col`` distribution (one row per
     unit, e.g. revenue per supplier) — the inequality/concentration
     number behind "the top 1% of domains contribute 60% of tokens".
@@ -334,7 +313,6 @@ def gini_concentration(
         per_value,
         ["v"],
         ["c"],
-        num_partitions,
         boundary_source=(df.select(F.col(value_col).alias("_v_")), "_v_"),
         with_totals=True,
     )
@@ -362,7 +340,7 @@ def gini_concentration(
     )
 
 
-def _cov_project(sxy_df, sums, decimals: int):
+def _cov_project(sxy_df, sums):
     """Shared final projection for both covariance formulations: from
     integer-scaled sums (sxy = Σ x6_i·x6_j, sx = Σ x6 per dim, elements
     scaled by 10^6) to the rounded covariance. Both paths feed the SAME
@@ -387,7 +365,7 @@ def _cov_project(sxy_df, sums, decimals: int):
                     )
                     / F.lit(1000000000000.0)
                     / (F.col("n") - 1).cast("double"),
-                    decimals,
+                    6,
                 )
                 + F.lit(0.0)  # IEEE -0.0 + 0.0 = +0.0: canonical zero on both engines
             ).alias("cov"),
@@ -395,12 +373,7 @@ def _cov_project(sxy_df, sums, decimals: int):
     )
 
 
-def covariance_matrix(
-    vectors: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 16,
-    decimals: int = 6,
-) -> DataFrame:
+def covariance_matrix(vectors: DataFrame, dim: int = 16) -> DataFrame:
     """Upper-triangle covariance matrix of an embedding column — the
     embedding-space drift statistic (compare against the snapshot's
     matrix to detect encoder or corpus shift; feeds whitening/PCA).
@@ -429,11 +402,11 @@ def covariance_matrix(
 
     Returns one row per (i, j) with i <= j: (i, j, n, cov).
     """
-    sxy_df, sums = _gram_partials(vectors, vec_col, dim)
-    return _cov_project(sxy_df, sums, decimals)
+    sxy_df, sums = _gram_partials(vectors, dim)
+    return _cov_project(sxy_df, sums)
 
 
-def _gram_partials(vectors: DataFrame, vec_col: str, dim: int):
+def _gram_partials(vectors: DataFrame, dim: int):
     """The shared Arrow-batched integer Gram pass behind
     :func:`covariance_matrix` and :func:`correlation_matrix`: per-batch
     exact int64 Xᵀ·X + per-dim sums (d(d+1)/2 + d rows per BATCH), merged
@@ -446,7 +419,7 @@ def _gram_partials(vectors: DataFrame, vec_col: str, dim: int):
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             # engine-equal quantization: round half away from zero at 1e6
             Xs = (np.sign(X) * np.floor(np.abs(X) * 1e6 + 0.5)).astype(np.int64)
             # Overflow guard: each Gram entry sums chunk_len products each
@@ -486,7 +459,7 @@ def _gram_partials(vectors: DataFrame, vec_col: str, dim: int):
                 )
                 yield pd.concat([out, dsum], ignore_index=True)
 
-    partials = vectors.select(vec_col).mapInPandas(
+    partials = vectors.select("embedding").mapInPandas(
         gram_batches, "i int, j int, sxy long, n long"
     )
     sxy_df = (
@@ -505,12 +478,7 @@ def _gram_partials(vectors: DataFrame, vec_col: str, dim: int):
     return sxy_df, sums
 
 
-def correlation_matrix(
-    vectors: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 16,
-    decimals: int = 6,
-) -> DataFrame:
+def correlation_matrix(vectors: DataFrame, dim: int = 16) -> DataFrame:
     """Upper-triangle Pearson correlation matrix of an embedding column —
     the scale-free twin of :func:`covariance_matrix` (feature-redundancy
     audit: highly correlated dimensions signal a collapsed encoder or a
@@ -527,7 +495,7 @@ def correlation_matrix(
 
     Returns one row per (i, j) with i <= j: (i, j, n, corr).
     """
-    sxy_df, sums = _gram_partials(vectors, vec_col, dim)
+    sxy_df, sums = _gram_partials(vectors, dim)
     nd = F.col("n").cast("double")
 
     def var_term(sxy, sx):
@@ -560,7 +528,7 @@ def correlation_matrix(
             )
             .otherwise(
                 F.round(
-                    num / F.sqrt(F.col("var_i") * F.col("var_j")), decimals
+                    num / F.sqrt(F.col("var_i") * F.col("var_j")), 6
                 )
                 + F.lit(0.0)
             )
@@ -632,12 +600,7 @@ def cusum_changepoint(
     )
 
 
-def covariance_matrix_decimal(
-    vectors: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 16,
-    decimals: int = 6,
-) -> DataFrame:
+def covariance_matrix_decimal(vectors: DataFrame, dim: int = 16) -> DataFrame:
     """Engine-side verification twin of :func:`covariance_matrix`: the
     same integer-scaled sums built from pure Catalyst expressions — each
     row expands its d(d+1)/2 index pairs inline (nested transform +
@@ -650,7 +613,7 @@ def covariance_matrix_decimal(
 
     def elem(i):
         return (
-            F.element_at(F.col(vec_col), i + 1)
+            F.element_at(F.col("embedding"), i + 1)
             .cast("double")
             .cast("decimal(18,6)")
             * 1000000
@@ -678,7 +641,7 @@ def covariance_matrix_decimal(
         F.count(F.lit(1)).cast("long").alias("n"),
     )
     sums = (
-        vectors.select(F.posexplode(F.col(vec_col)).alias("d", "x"))
+        vectors.select(F.posexplode(F.col("embedding")).alias("d", "x"))
         .groupBy("d")
         .agg(
             F.sum(
@@ -688,7 +651,7 @@ def covariance_matrix_decimal(
             ).alias("sx")
         )
     )
-    return _cov_project(sxy_df, sums, decimals)
+    return _cov_project(sxy_df, sums)
 
 
 def chi_square_independence(
@@ -752,12 +715,7 @@ def chi_square_independence(
     )
 
 
-def weighted_median(
-    df: DataFrame,
-    value_col: str,
-    weight_col: str,
-    num_partitions: int = 32,
-) -> DataFrame:
+def weighted_median(df: DataFrame, value_col: str, weight_col: str) -> DataFrame:
     """Global weighted (lower) median: the smallest value v whose
     inclusive cumulative weight reaches half the total — the robust
     center of a weighted distribution (quality-weighted corpus length,
@@ -782,7 +740,6 @@ def weighted_median(
         agg,
         ["v"],
         ["w", "_one_"],
-        num_partitions,
         boundary_source=(df.select(F.col(value_col).alias("_v_")), "_v_"),
         with_totals=True,
     )
@@ -796,19 +753,14 @@ def weighted_median(
     )
 
 
-def seasonal_decompose(
-    daily: DataFrame,
-    day_col: str = "day",
-    value_col: str = "val_dec",
-    period: int = 7,
-) -> DataFrame:
+def seasonal_decompose(daily: DataFrame, period: int = 7) -> DataFrame:
     """Classical additive seasonal decomposition of a daily series:
     value = trend + seasonal + residual (Cleveland's STL ancestor — the
     moving-average decomposition of Macaulay '31; statsmodels'
     ``seasonal_decompose`` is the same recipe).
 
-    ``daily`` must be one row per ``day_col`` (a long epoch-day or date)
-    with ``value_col`` an EXACT decimal (order-insensitive sums upstream).
+    ``daily`` must be one row per ``day`` (a long epoch-day or date)
+    with ``val_dec`` an EXACT decimal (order-insensitive sums upstream).
 
     Determinism contract (hash-matchable across engines): every mean is a
     single IEEE division of an exact-decimal numerator — trend is the
@@ -834,14 +786,14 @@ def seasonal_decompose(
             "periods need the 2xm centered moving average"
         )
     half = period // 2
-    w = Window.orderBy(day_col).rowsBetween(-half, half)
+    w = Window.orderBy("day").rowsBetween(-half, half)
     p = F.lit(period)
     full = (
         daily.withColumn("_n_", F.count("*").over(w))
-        .withColumn("_s_", F.sum(value_col).over(w))
+        .withColumn("_s_", F.sum("val_dec").over(w))
         .filter(F.col("_n_") == p)
-        .withColumn("_detr_", F.col(value_col) * p - F.col("_s_"))
-        .withColumn("_phase_", F.pmod(F.col(day_col), p))
+        .withColumn("_detr_", F.col("val_dec") * p - F.col("_s_"))
+        .withColumn("_phase_", F.pmod(F.col("day"), p))
     )
     phase = full.groupBy("_phase_").agg(
         F.sum("_detr_").alias("_num_"), F.count("*").alias("_cnt_")
@@ -855,8 +807,8 @@ def seasonal_decompose(
     return (
         full.join(F.broadcast(seasonal), "_phase_")
         .select(
-            F.col(day_col),
-            F.round(F.col(value_col).cast("double"), 6).alias("val"),
+            F.col("day"),
+            F.round(F.col("val_dec").cast("double"), 6).alias("val"),
             F.round(F.col("_s_").cast("double") / p, 6).alias("trend"),
             "seasonal",
             F.round(
@@ -867,9 +819,7 @@ def seasonal_decompose(
     )
 
 
-def embedding_centroid_shift(
-    a: DataFrame, b: DataFrame, vec_col: str = "embedding"
-) -> DataFrame:
+def embedding_centroid_shift(a: DataFrame, b: DataFrame) -> DataFrame:
     """Per-dimension centroid shift between two embedding snapshots —
     the cheapest embedding-drift monitor (a new encoder version, a
     domain shift, or a poisoned batch moves the mean before it moves
@@ -891,7 +841,7 @@ def embedding_centroid_shift(
         xd = F.col("x").cast("double")
         xq = (F.signum(xd) * F.floor(F.abs(xd) * F.lit(1e6) + F.lit(0.5))).cast("long")
         return (
-            df.select(F.posexplode(F.col(vec_col)).alias("dim", "x"))
+            df.select(F.posexplode(F.col("embedding")).alias("dim", "x"))
             .groupBy("dim")
             .agg(
                 F.round(
@@ -1051,12 +1001,7 @@ def theil_sen_daily(
     return n_days.join(picked, "g").select("g", "n_days", "n_pairs", "slope_med")
 
 
-def pca_top_component(
-    vectors: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    iterations: int = 8,
-) -> DataFrame:
+def pca_top_component(vectors: DataFrame, dim: int = 64) -> DataFrame:
     """(i, pc1_milli, lambda6): leading principal component of an
     embedding column by POWER ITERATION on the exact-integer covariance
     matrix — the embedding-QA decomposition (how much variance one
@@ -1095,9 +1040,7 @@ def pca_top_component(
     import decimal
     import math
 
-    cov_rows = covariance_matrix(
-        vectors, vec_col, dim=dim, decimals=6
-    ).collect()
+    cov_rows = covariance_matrix(vectors, dim=dim).collect()
     spark = vectors.sparkSession
     schema = "i LONG, pc1_milli LONG, lambda6 DOUBLE"
     if not cov_rows:
@@ -1121,7 +1064,7 @@ def pca_top_component(
     v = {i: 1000 for i in idx}
     prev_v = v  # v_{k-1}: the Rayleigh quotient reads it
     rvec = {i: 0 for i in idx}
-    for _ in range(iterations):
+    for _ in range(8):
         rvec = {i: 0 for i in idx}
         for (i, j), c in a6.items():
             rvec[i] += c * v[j]

@@ -115,14 +115,7 @@ def _fixpoint(
         release(held)
 
 
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    node_col: str = "id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iterations: int = 20,
-) -> DataFrame:
+def connected_components(nodes: DataFrame, edges: DataFrame, max_iterations: int = 20) -> DataFrame:
     """(id, component): every node labeled with the min node id reachable
     over the undirected edge set, by min-label propagation:
 
@@ -148,9 +141,9 @@ def connected_components(
     # each round reads both orientations from its checkpoint, where a
     # symmetrized plan would evaluate the upstream pair pipeline (MinHash
     # signatures + banded join + Jaccard verification) once per branch.
-    node_ids = nodes.select(F.col(node_col).alias("id")).distinct()
+    node_ids = nodes.select("id").distinct()
     directed = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .join(node_ids.select(F.col("id").alias("src")), "src", "left_semi")
         .join(node_ids.select(F.col("id").alias("dst")), "dst", "left_semi")
         # a USING-column join moves the key first ([dst, src] here) and
@@ -207,7 +200,7 @@ def connected_components(
         seed, step, max_iterations, unchanged, edges=directed, name="connected_components"
     )
     return (
-        nodes.select(F.col(node_col).alias("id"))
+        nodes.select("id")
         .join(labels.withColumnRenamed("id", "_eid_"),
               F.col("id") == F.col("_eid_"), "left")
         .select(
@@ -220,9 +213,6 @@ def connected_components(
 def connected_components_star(
     nodes: DataFrame,
     edges: DataFrame,
-    node_col: str = "id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
     max_iterations: int = 30,
 ) -> DataFrame:
     """Large-star/small-star alternation (Kiveris et al., "Connected
@@ -276,14 +266,14 @@ def connected_components_star(
         return new.count() == old.count() and new.exceptAll(old).limit(1).count() == 0
 
     seed = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
+        edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
     e = _fixpoint(seed, step, max_iterations, stable, name="connected_components_star")
     labels = e.groupBy("u").agg(F.min("v").alias("component"))
     return (
-        nodes.select(F.col(node_col).alias("id"))
+        nodes.select("id")
         .join(labels, F.col("id") == F.col("u"), "left")
         .select("id", F.coalesce(F.col("component"), F.col("id")).alias("component"))
     )
@@ -292,9 +282,6 @@ def connected_components_star(
 def duplicate_clusters(
     nodes: DataFrame,
     pairs: DataFrame,
-    node_col: str = "id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
     algorithm: str = "propagation",
 ) -> DataFrame:
     """(id, cluster_id, is_canonical): cluster near-dup pairs and mark the
@@ -304,7 +291,7 @@ def duplicate_clusters(
     ``algorithm='star'`` switches to the large-star/small-star contraction
     (O(log n) rounds on any topology — use for deep/chainy pair graphs)."""
     cc_fn = connected_components_star if algorithm == "star" else connected_components
-    cc = cc_fn(nodes, pairs, node_col, src_col, dst_col)
+    cc = cc_fn(nodes, pairs)
     return cc.select(
         "id",
         F.col("component").alias("cluster_id"),
@@ -312,12 +299,7 @@ def duplicate_clusters(
     )
 
 
-def canonical_representatives(
-    clusters: DataFrame,
-    quality: DataFrame,
-    id_col: str = "id",
-    quality_col: str = "quality",
-) -> DataFrame:
+def canonical_representatives(clusters: DataFrame, quality: DataFrame) -> DataFrame:
     """Keep-best retention policy: per duplicate cluster, elect the member
     with the highest quality signal (tiebreak: lowest id) instead of the
     min-id keeper.
@@ -332,11 +314,11 @@ def canonical_representatives(
 
     Returns (cluster_id, keep_id, keep_quality, cluster_size, n_dropped).
     """
-    j = clusters.join(quality, id_col)
+    j = clusters.join(quality, "id")
     best = F.max(
         F.struct(
-            F.col(quality_col).alias("q"),
-            (-F.col(id_col)).alias("neg_id"),
+            F.col("quality").alias("q"),
+            (-F.col("id")).alias("neg_id"),
         )
     ).alias("best")
     return (
@@ -352,16 +334,14 @@ def canonical_representatives(
     )
 
 
-def out_degree_weighted(
-    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
-) -> DataFrame:
+def out_degree_weighted(edges: DataFrame) -> DataFrame:
     """(src, dst, out_deg): every edge with the out-degree of its source,
     the weighted list :func:`pagerank_int` and
     :func:`personalized_pagerank_int` push rank over. Every edge counts
     toward the degree, whatever its endpoints (a per-src window). The
     result is lazy; a caller that runs several walks over it pins it
     (``localCheckpoint()``) and releases it."""
-    return edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).withColumn(
+    return edges.select("src", "dst").withColumn(
         "out_deg", F.count("*").over(Window.partitionBy("src"))
     )
 
@@ -403,12 +383,7 @@ def _rank_walk(
     return _fixpoint(seed, step, iterations)
 
 
-def pagerank_int(
-    nodes: DataFrame,
-    weighted: DataFrame,
-    iterations: int = 3,
-    node_col: str = "id",
-) -> DataFrame:
+def pagerank_int(nodes: DataFrame, weighted: DataFrame, iterations: int = 3) -> DataFrame:
     """Fixed-iteration PageRank in exact integer micro-units
     (rank x 10^12 as int64) — bit-identical on any engine.
 
@@ -425,7 +400,7 @@ def pagerank_int(
     ``weighted`` is the graph as an :func:`out_degree_weighted` list.
     """
     base = (10**12) // nodes.count()
-    ids = nodes.select(F.col(node_col).alias("id"))
+    ids = nodes.select("id")
     floor = ids.select("id", F.lit((15 * base) // 100).alias("f"))
     seed = ids.select("id", F.lit(base).alias("rank"))
     return _rank_walk(weighted, seed, floor, F.col("f").isNotNull(), iterations)
@@ -435,7 +410,6 @@ def personalized_pagerank_int(
     weighted: DataFrame,
     seeds: DataFrame,
     iterations: int = 3,
-    node_col: str = "id",
 ) -> DataFrame:
     """Personalized PageRank (random walk with restart to a SEED set) in
     exact integer micro-units — the "more like these" expansion primitive:
@@ -445,7 +419,7 @@ def personalized_pagerank_int(
 
     Same int64 spec as :func:`pagerank_int` so any engine agrees
     bit-for-bit, but the teleport mass lands ONLY on seeds: base =
-    10^12 div n_seeds; rank_0 = base on seeds else 0; update(v) =
+    10^12 div n_seeds (distinct seed ids); rank_0 = base on seeds else 0; update(v) =
     (15*base div 100 if v is seed else 0) + (85 * sum over in-edges of
     rank div out_deg) div 100. Nodes the walk never reaches stay at
     exactly 0 and are left out, so the result is naturally sparse — at
@@ -453,8 +427,8 @@ def personalized_pagerank_int(
     shuffles, and the per-iteration cost tracks the seed neighborhood
     size. ``weighted`` is as in :func:`pagerank_int`.
     """
-    base = (10**12) // seeds.count()
-    seed_ids = seeds.select(F.col(node_col).alias("id")).distinct()
+    seed_ids = seeds.select("id").distinct()
+    base = (10**12) // seed_ids.count()
     floor = seed_ids.select("id", F.lit((15 * base) // 100).alias("f"))
     seed = seed_ids.select("id", F.lit(base).cast("long").alias("rank"))
     return _rank_walk(weighted, seed, floor, F.col("rank") > 0, iterations)
@@ -554,16 +528,14 @@ def _degrees(e: DataFrame) -> DataFrame:
     )
 
 
-def k_core(
-    edges: DataFrame, k: int, max_rounds: int = 50
-) -> DataFrame:
+def k_core(edges: DataFrame, k: int) -> DataFrame:
     """Nodes of the k-core: the maximal subgraph where every node keeps
     degree >= k — the dense-subgraph miner behind collusion/spam-farm
     detection (a review ring or engagement farm survives peeling; organic
     long-tail activity does not). Batagelj-Zaversnik peeling, distributed:
     each round drops nodes with degree < k and the edges touching them,
     until a fixpoint. Rounds are peel DEPTH (shallow for real graphs),
-    bounded by ``max_rounds``.
+    bounded by 50.
 
     ``edges`` is (id_a, id_b) undirected, self-loops ignored. Returns
     (node, degree) of the surviving core with IN-CORE degrees.
@@ -592,17 +564,10 @@ def k_core(
         return sizes[-1] == sizes[-2]
 
     seed = edges.filter(F.col("id_a") != F.col("id_b")).select("id_a", "id_b").distinct()
-    return _degrees(_fixpoint(seed, step, max_rounds, peeled_nothing, name="k_core"))
+    return _degrees(_fixpoint(seed, step, 50, peeled_nothing, name="k_core"))
 
 
-def hits_int(
-    nodes: DataFrame,
-    edges: DataFrame,
-    rounds: int = 2,
-    node_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def hits_int(nodes: DataFrame, edges: DataFrame, rounds: int = 2) -> DataFrame:
     """(id, hub, auth): fixed-round HITS in exact unnormalized int64.
 
     Kleinberg's mutual-reinforcement pair — hub(i) = sum of auth over
@@ -622,7 +587,7 @@ def hits_int(
     scores twice (the auth update and the output row), so the previous
     state is read twice per round.
     """
-    ids = nodes.select(F.col(node_col).alias("id"))
+    ids = nodes.select("id")
 
     def step(state: DataFrame, sym: DataFrame) -> DataFrame:
         hub_sum = (
@@ -645,18 +610,11 @@ def hits_int(
     seed = ids.select(
         "id", F.lit(0).cast("long").alias("hub"), F.lit(1).cast("long").alias("auth")
     )
-    sym = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    sym = edges.select("src", "dst")
     return _fixpoint(seed, step, rounds, edges=sym, reads_twice=True)
 
 
-def label_propagation_int(
-    nodes: DataFrame,
-    edges: DataFrame,
-    rounds: int = 3,
-    node_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def label_propagation_int(nodes: DataFrame, edges: DataFrame, rounds: int = 3) -> DataFrame:
     """(id, label): synchronous label-propagation communities with a
     deterministic tie-break — the cheap community detector (Raghavan et
     al.) curation runs on a similarity graph to find topical groups
@@ -677,7 +635,7 @@ def label_propagation_int(
     label frames are 2-long rows per node, read twice per round (by the
     neighbor count and by the update join).
     """
-    ids = nodes.select(F.col(node_col).alias("id"))
+    ids = nodes.select("id")
 
     def step(labels: DataFrame, sym: DataFrame) -> DataFrame:
         counts = (
@@ -712,7 +670,7 @@ def label_propagation_int(
         )
 
     seed = ids.select("id", F.col("id").alias("label"))
-    sym = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    sym = edges.select("src", "dst")
     return _fixpoint(seed, step, rounds, edges=sym, reads_twice=True)
 
 

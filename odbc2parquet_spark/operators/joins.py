@@ -214,7 +214,6 @@ def bloom_semi_join(
     big_key: str,
     small_key: str,
     m_bits: int = 4096,
-    k: int = 3,
 ) -> DataFrame:
     """Semi-join with a Bloom runtime filter: build a compact bitset from
     the small side's keys, pre-filter the big side AT THE SCAN (broadcast
@@ -237,7 +236,7 @@ def bloom_semi_join(
         hexd = F.md5(key_col.cast("string"))
         h1 = F.conv(F.substring(hexd, 1, 15), 16, 10).cast("long")
         h2 = F.conv(F.substring(hexd, 16, 15), 16, 10).cast("long")
-        return F.array(*[((h1 + F.lit(j) * h2) % m_bits) for j in range(k)])
+        return F.array(*[((h1 + F.lit(j) * h2) % m_bits) for j in range(3)])
 
     bloom = (
         small.select(F.explode(positions(F.col(small_key))).alias("p"))
@@ -257,7 +256,7 @@ def bloom_semi_join(
     h2 = F.conv(F.substring(hexd, 16, 15), 16, 10).cast("long")
     probe = big
     conds = []
-    for j in range(k):
+    for j in range(3):
         pos = (h1 + F.lit(j) * h2) % m_bits
         bj = bloom.withColumnsRenamed({"word": f"_w{j}", "bits": f"_bits{j}"})
         probe = probe.withColumn(f"_p{j}", pos).join(

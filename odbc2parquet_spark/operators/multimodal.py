@@ -80,9 +80,7 @@ def _map_payloads(
 PAYLOAD_SCHEMA = "doc_id long, payload binary, mime string, n_bytes long"
 
 
-def _encode(
-    docs: DataFrame, text_col: str, mime: str, synth: Callable[[bytes, int], bytes]
-) -> DataFrame:
+def _encode(docs: DataFrame, mime: str, synth: Callable[[bytes, int], bytes]) -> DataFrame:
     """Each document's text becomes one ``mime`` payload,
     ``synth(utf-8 bytes, n_chars)``."""
 
@@ -90,7 +88,7 @@ def _encode(
         out = synth(text.encode("utf-8"), len(text))
         return [(doc_id, bytearray(out), mime, len(out))]
 
-    return _map_payloads(docs, PAYLOAD_SCHEMA, rows, col=text_col, read=str)
+    return _map_payloads(docs, PAYLOAD_SCHEMA, rows, col="text", read=str)
 
 
 def _cycle(source: bytes, n: int) -> bytes:
@@ -106,13 +104,13 @@ FEATURE_SCHEMA = (
 )
 
 
-def attach_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_binary(docs: DataFrame) -> DataFrame:
     """Simulate a multimodal table: payload as opaque binary + metadata.
 
     On real data this is the ingestion shape: (id, payload binary,
     mime string, n_bytes long).
     """
-    payload = F.encode(F.col(text_col), "utf-8")
+    payload = F.encode(F.col("text"), "utf-8")
     return docs.select(
         "doc_id",
         payload.alias("payload"),
@@ -247,8 +245,8 @@ def decode_features(binary_df: DataFrame) -> DataFrame:
     return _map_payloads(binary_df, FEATURE_SCHEMA, rows)
 
 
-def frame_sample(binary_df: DataFrame, every_n_bytes: int = 97) -> DataFrame:
-    """'Frame sampling' stub: pick every Nth byte as a frame marker.
+def frame_sample(binary_df: DataFrame) -> DataFrame:
+    """'Frame sampling' stub: pick every 97th byte as a frame marker.
 
     Stands in for video frame extraction; shows the explode-to-frames
     shape (one row per sampled frame) with deterministic content.
@@ -256,10 +254,10 @@ def frame_sample(binary_df: DataFrame, every_n_bytes: int = 97) -> DataFrame:
     # NB: Spark's sequence(1, 0) yields a DESCENDING [1, 0], not an empty
     # array — payloads shorter than the stride must short-circuit.
     frames = F.expr(
-        f"CASE WHEN n_bytes < {every_n_bytes} THEN array() ELSE "
-        f"transform(sequence(1, int(n_bytes div {every_n_bytes})), "
+        "CASE WHEN n_bytes < 97 THEN array() ELSE "
+        "transform(sequence(1, int(n_bytes div 97)), "
         f"i -> struct(CAST(i AS BIGINT) AS frame_no, "
-        f"ascii(substring(decode(payload, 'utf-8'), (i - 1) * {every_n_bytes} + 1, 1)) AS byte_val)) END"
+        "ascii(substring(decode(payload, 'utf-8'), (i - 1) * 97 + 1, 1)) AS byte_val)) END"
     )
     return binary_df.select("doc_id", F.explode(frames).alias("f")).select(
         "doc_id", F.col("f.frame_no").alias("frame_no"), F.col("f.byte_val").alias("byte_val")
@@ -273,9 +271,7 @@ RESIZE_SCHEMA = (
 )
 
 
-def resize_images(
-    binary_df: DataFrame, target_w: int = 16, target_h: int = 12, channels: int = 3
-) -> DataFrame:
+def resize_images(binary_df: DataFrame, target_w: int = 16, target_h: int = 12) -> DataFrame:
     """'Resize' each binary payload to a fixed target_w x target_h buffer.
 
     Real pipeline shape: mapInPandas over (id, payload) with the resized
@@ -285,7 +281,7 @@ def resize_images(
     byte-cycled to the target size, which the oracle recomputes; no
     header is parsed.
     """
-    target = target_w * target_h * channels
+    target = target_w * target_h * 3
 
     def rows(doc_id, p: bytes) -> list[tuple]:
         resized = _cycle(p, target)
@@ -298,7 +294,7 @@ def resize_images(
 HEADER_SCHEMA = "doc_id long, fmt string, width int, height int, channels int"
 
 
-def encode_bmp(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def encode_bmp(docs: DataFrame) -> DataFrame:
     """Synthesize a REAL image column: each document's text becomes the
     pixel bytes of a valid 24-bit BMP whose dimensions derive from
     n_chars (width = n_chars % 64 + 1, height = n_chars % 48 + 1).
@@ -307,7 +303,7 @@ def encode_bmp(docs: DataFrame, text_col: str = "text") -> DataFrame:
     batches producing a binary column of genuine image files, so the
     decode stage downstream exercises its real parser, not the fake."""
     return _encode(
-        docs, text_col, "image/bmp", lambda raw, n: synth_bmp(raw, n % 64 + 1, n % 48 + 1)
+        docs, "image/bmp", lambda raw, n: synth_bmp(raw, n % 64 + 1, n % 48 + 1)
     )
 
 
@@ -324,7 +320,7 @@ def decode_image_headers(binary_df: DataFrame) -> DataFrame:
 EMBED_SCHEMA = "doc_id long, embedding array<double>"
 
 
-def embed_payloads(binary_df: DataFrame, dim: int = 8) -> DataFrame:
+def embed_payloads(binary_df: DataFrame) -> DataFrame:
     """Binary payload -> embedding vector (the encoder step that links the
     multimodal store to the similarity stack: decode -> embed -> ANN).
 
@@ -343,7 +339,7 @@ def embed_payloads(binary_df: DataFrame, dim: int = 8) -> DataFrame:
                 / 16777216.0,
                 6,
             )
-            for j in range(dim)
+            for j in range(8)
         ]
         return [(doc_id, vec)]
 
@@ -439,13 +435,12 @@ def _pcm16(p: bytes) -> np.ndarray:
     raise ValueError("no data chunk")
 
 
-def encode_wav(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def encode_wav(docs: DataFrame) -> DataFrame:
     """Synthesize a REAL audio column: each document's text bytes become
     PCM sample data in a valid WAV whose rate/channels/length derive from
     n_chars — the ingestion-side twin of :func:`decode_audio_headers`."""
     return _encode(
         docs,
-        text_col,
         "audio/wav",
         lambda raw, n: synth_wav(raw, 8000 + (n % 8) * 1000, n % 2 + 1, n % 500 + 1),
     )
@@ -541,13 +536,12 @@ def parse_mp4_header(p: bytes) -> tuple[str, int, int, int, int, int]:
     return (brand, timescale, duration, n_top, mdat_bytes, duration * 1000 // timescale)
 
 
-def encode_mp4(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def encode_mp4(docs: DataFrame) -> DataFrame:
     """Synthesize a REAL video-container column: each document's text
     bytes become the mdat of a valid MP4 whose timescale/duration derive
     from n_chars — the ingestion-side twin of :func:`decode_video_headers`."""
     return _encode(
         docs,
-        text_col,
         "video/mp4",
         lambda raw, n: synth_mp4(raw, 600 + (n % 5) * 100, (n * 31) % 100_000),
     )
@@ -750,13 +744,12 @@ def video_frame_index(binary_df: DataFrame, every_k: int = 3) -> DataFrame:
     return _map_payloads(binary_df, FRAME_INDEX_SCHEMA, rows)
 
 
-def encode_mp4_samples(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def encode_mp4_samples(docs: DataFrame) -> DataFrame:
     """Synthesize MP4s WITH sample tables: n % 24 + 1 samples whose data
     cycles the document's text bytes — the ingestion twin of
     :func:`video_frame_index`."""
     return _encode(
         docs,
-        text_col,
         "video/mp4",
         lambda raw, n: synth_mp4_samples(raw, 600 + (n % 5) * 100, (n * 31) % 100_000, n % 24 + 1),
     )
@@ -770,12 +763,12 @@ def _bits_to_long(bits: np.ndarray) -> int:
 DHASH_SCHEMA = "doc_id long, dhash long"
 
 
-def dhash_bmp(binary_df: DataFrame, rows: int = 7, cols: int = 9) -> DataFrame:
+def dhash_bmp(binary_df: DataFrame) -> DataFrame:
     """Perceptual difference-hash (dHash) on TRUE BMP pixels: decode the
-    padded pixel grid, nearest-sample a ``rows x cols`` grayscale
+    padded pixel grid, nearest-sample a 7 x 9 grayscale
     thumbnail (gray = (B+G+R) // 3, integer), and set one bit per
     horizontal neighbor pair (right > left), bit position
-    ``r * (cols-1) + c``. 7x9 gives 56 bits — always below the int64
+    ``r * 8 + c``. 7x9 gives 56 bits — always below the int64
     sign bit, so an external engine's shift arithmetic agrees.
 
     dHash survives re-encoding/resize, which byte-level hashing does not
@@ -790,7 +783,7 @@ def dhash_bmp(binary_df: DataFrame, rows: int = 7, cols: int = 9) -> DataFrame:
         # thumbnail row 0 is the IMAGE's top row and the hash matches a
         # standard dHash fed the same image
         px = _bmp_pixels(p)[::-1]
-        gray = _nearest(px, rows, cols).astype(np.int64).sum(axis=2) // 3
+        gray = _nearest(px, 7, 9).astype(np.int64).sum(axis=2) // 3
         return [(doc_id, _bits_to_long(gray[:, 1:] > gray[:, :-1]))]
 
     return _map_payloads(binary_df, DHASH_SCHEMA, hash_rows)
@@ -800,20 +793,19 @@ def dhash_near_pairs(
     hashes: DataFrame,
     bands: int = 4,
     band_bits: int = 14,
-    max_hamming: int = 6,
     max_bucket: int = 1000,
 ) -> DataFrame:
     """Near-duplicate image pairs (id_a, id_b, hamming) from dHash values:
     :func:`similarity.banded_hamming_pairs` pairs hashes that agree on one
     of ``bands`` ``band_bits``-bit slices (buckets above ``max_bucket``
     dropped, as in the text LSH paths; NULL hashes never paired) and keeps
-    those within ``max_hamming`` bits. Finding every such pair is
-    guaranteed only when max_hamming < bands (pigeonhole) and the slices
-    cover the hash; at the defaults (4 bands, max_hamming 6) a pair whose
+    those within 6 bits. Finding every such pair is
+    guaranteed only when 6 < bands (pigeonhole) and the slices
+    cover the hash; at the default 4 bands a pair whose
     differing bits touch all four bands is missed.
     """
     return banded_hamming_pairs(
-        hashes, "doc_id", "dhash", bands, band_bits, max_hamming, max_bucket
+        hashes, "doc_id", "dhash", bands, band_bits, 6, max_bucket
     )
 
 
@@ -948,12 +940,12 @@ def decode_png_pixels(binary_df: DataFrame) -> DataFrame:
     return _map_payloads(binary_df, PIXEL_STATS_SCHEMA, rows)
 
 
-def encode_png(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def encode_png(docs: DataFrame) -> DataFrame:
     """Synthesize a REAL PNG column: each document's text becomes the
     pixel bytes of a valid zlib-compressed 8-bit RGB PNG (width/height
     derived from n_chars like encode_bmp)."""
     return _encode(
-        docs, text_col, "image/png", lambda raw, n: synth_png(raw, n % 48 + 1, n % 32 + 1)
+        docs, "image/png", lambda raw, n: synth_png(raw, n % 48 + 1, n % 32 + 1)
     )
 
 
@@ -974,12 +966,12 @@ def _digest_jumps(binary_df: DataFrame) -> tuple[DataFrame, Window]:
     return jumps, w
 
 
-def video_scene_cuts(binary_df: DataFrame, threshold: int = 32) -> DataFrame:
+def video_scene_cuts(binary_df: DataFrame) -> DataFrame:
     """Scene-cut detection plumbing on the REAL sample table: every
     sample's bytes are located via stsz/stco (:func:`video_frame_index`
     with ``every_k=1``), digested, and consecutive samples compared by
     the Hamming distance of their 60-bit digest prefixes — a jump above
-    ``threshold`` bits marks a content discontinuity (the shot-boundary
+    32 bits marks a content discontinuity (the shot-boundary
     heuristic production pipelines run before any codec; with a codec
     present the same shape compares per-frame perceptual hashes, see
     :func:`dhash_bmp`).
@@ -996,15 +988,15 @@ def video_scene_cuts(binary_df: DataFrame, threshold: int = 32) -> DataFrame:
     return jumps.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_samples"),
         F.sum(
-            F.when(F.col("dist") >= threshold, 1).otherwise(0)
+            F.when(F.col("dist") >= 32, 1).otherwise(0)
         ).cast("long").alias("n_cuts"),
         F.coalesce(F.max("dist"), F.lit(0)).cast("int").alias("max_jump"),
     )
 
 
-def video_keyframes(binary_df: DataFrame, threshold: int = 32) -> DataFrame:
+def video_keyframes(binary_df: DataFrame) -> DataFrame:
     """Scene segmentation + keyframe selection on the REAL sample table:
-    samples partition into scenes at every digest jump >= ``threshold``
+    samples partition into scenes at every digest jump >= 32 bits
     (the :func:`video_scene_cuts` boundary rule), and each scene's FIRST
     sample is its keyframe — the representative-frame pick a video
     curation pipeline extracts per shot before any embedding spend
@@ -1020,7 +1012,7 @@ def video_keyframes(binary_df: DataFrame, threshold: int = 32) -> DataFrame:
     jumps = jumps.withColumn(
         "scene_id",
         F.sum(
-            F.when(F.col("dist") >= threshold, 1).otherwise(0)
+            F.when(F.col("dist") >= 32, 1).otherwise(0)
         ).over(w.rowsBetween(Window.unboundedPreceding, 0)),
     )
     sw = Window.partitionBy("doc_id", "scene_id").orderBy("sample_idx")
@@ -1048,10 +1040,10 @@ def _frame_energies(v: np.ndarray, n: int) -> list[int]:
 ENERGY_SHINGLE_SCHEMA = "doc_id long, g string"
 
 
-def audio_energy_shingles(binary_df: DataFrame, window: int = 64) -> DataFrame:
+def audio_energy_shingles(binary_df: DataFrame) -> DataFrame:
     """(doc_id, g): per-window energy shingles of a PCM stream — the
     audio counterpart of the video sample digests (video_frame_index):
-    the int16 stream splits into fixed windows, each window's EXACT
+    the int16 stream splits into fixed 64-sample windows, each window's EXACT
     int64 energy (sum of squares) quantizes to its TOP-6-BIT bucket
     ((energy+1) >> (bit_length-6) — a ~1.5%-tolerance loudness level in
     pure integer arithmetic any engine reproduces), and the shingle is
@@ -1063,7 +1055,7 @@ def audio_energy_shingles(binary_df: DataFrame, window: int = 64) -> DataFrame:
 
     def rows(doc_id, p: bytes) -> list[tuple]:
         out = []
-        for widx, energy in enumerate(_frame_energies(_pcm16(p), window)):
+        for widx, energy in enumerate(_frame_energies(_pcm16(p), 64)):
             b = (energy + 1).bit_length()
             out.append((doc_id, f"{widx}:{b}:{(energy + 1) >> max(b - 6, 0)}"))
         return out
@@ -1074,12 +1066,10 @@ def audio_energy_shingles(binary_df: DataFrame, window: int = 64) -> DataFrame:
 AUDIO_FRAME_SCHEMA = "doc_id long, frame_idx long, n int, sum_sq long"
 
 
-def decode_audio_frame_energy(
-    binary_df: DataFrame, frame_len: int = 64
-) -> DataFrame:
+def decode_audio_frame_energy(binary_df: DataFrame) -> DataFrame:
     """Frame-level PCM energy decode: locate each WAV's data chunk,
     reinterpret it as little-endian int16, slice the flat sample stream
-    into ``frame_len``-sample frames (last frame may be partial), and
+    into 64-sample frames (last frame may be partial), and
     emit exact integers (frame_idx, n, sum_sq) per frame — the substrate
     for energy-threshold voice-activity detection. Arrow-batched
     mapInPandas with numpy int64 arithmetic, same decode core as
@@ -1089,8 +1079,8 @@ def decode_audio_frame_energy(
     def rows(doc_id, p: bytes) -> list[tuple]:
         v = _pcm16(p)
         return [
-            (doc_id, f, min(frame_len, len(v) - f * frame_len), energy)
-            for f, energy in enumerate(_frame_energies(v, frame_len))
+            (doc_id, f, min(64, len(v) - f * 64), energy)
+            for f, energy in enumerate(_frame_energies(v, 64))
         ]
 
     return _map_payloads(binary_df, AUDIO_FRAME_SCHEMA, rows, drop_corrupt=True)
@@ -1263,31 +1253,26 @@ def audio_landmarks(peaks: DataFrame) -> DataFrame:
     )
 
 
-def audio_fingerprint_match(
-    corpus_landmarks: DataFrame,
-    probe_landmarks: DataFrame,
-    top_k: int = 3,
-    max_docs_per_landmark: int = 64,
-) -> DataFrame:
+def audio_fingerprint_match(corpus_landmarks: DataFrame, probe_landmarks: DataFrame) -> DataFrame:
     """(probe_doc, matched_doc, offset, votes, rank): Shazam-style
     constellation matching — probes join the corpus landmark INDEX on
     the landmark hash, votes accumulate per (probe, candidate, time
     offset), and a genuine match shows as a vote spike at ONE offset
     (random collisions smear across offsets). The landmark-frequency cap
-    drops stop-landmarks appearing in more than ``max_docs_per_landmark``
+    drops stop-landmarks appearing in more than 64
     distinct docs — the same bounded-bucket discipline as every LSH join
     here: a degenerate common landmark cannot explode the candidate
     join, and dropped mass only costs votes a true match has in excess.
 
     Shuffles: the cap count (one groupBy on l), the hash join on l, the
-    vote groupBy, the per-probe top-k window — all keyed; nothing
+    vote groupBy, the per-probe top-3 window — all keyed; nothing
     all-pairs.
     """
     freq = corpus_landmarks.groupBy("l").agg(
         F.countDistinct("doc_id").alias("nd")
     )
     idx = corpus_landmarks.join(
-        freq.filter(F.col("nd") <= max_docs_per_landmark).select("l"), "l"
+        freq.filter(F.col("nd") <= 64).select("l"), "l"
     )
     votes = (
         probe_landmarks.select(
@@ -1315,7 +1300,7 @@ def audio_fingerprint_match(
     )
     return (
         votes.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= top_k)
+        .filter(F.col("rank") <= 3)
         .select("probe_doc", "matched_doc", "offset", "votes", "rank")
     )
 

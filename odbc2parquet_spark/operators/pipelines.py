@@ -23,13 +23,7 @@ from odbc2parquet_spark.operators.dedup import (
 from odbc2parquet_spark.operators.text import TOKEN_RE, quality_score_col, words
 
 
-def _corpus_stages(
-    docs: DataFrame,
-    min_quality: float,
-    near_dup_threshold: float,
-    text_col: str,
-    id_col: str,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def _corpus_stages(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The shared lazy stage chain: (gated, exact, survivors).
 
     ONE definition used by both :func:`prepare_corpus` (the output) and
@@ -38,32 +32,24 @@ def _corpus_stages(
     """
     # Score in place (withColumn, no self-join back to a scored frame):
     # the gate is one scan with the score as a projected expression.
-    gated = docs.withColumn("quality_score", quality_score_col(text_col)).filter(
-        F.col("quality_score") >= min_quality
+    gated = docs.withColumn("quality_score", quality_score_col()).filter(
+        F.col("quality_score") >= 0.5
     )
-    exact = drop_exact_duplicates(gated, text_col, id_col)
-    pairs = minhash_near_duplicates(
-        exact, threshold=near_dup_threshold, text_col=text_col, id_col=id_col
-    )
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    survivors = exact.join(losers, id_col, "left_anti")
+    exact = drop_exact_duplicates(gated)
+    pairs = minhash_near_duplicates(exact)
+    losers = pairs.select(F.col("id_b").alias("doc_id")).distinct()
+    survivors = exact.join(losers, "doc_id", "left_anti")
     return gated, exact, survivors
 
 
-def prepare_corpus(
-    docs: DataFrame,
-    min_quality: float = 0.5,
-    near_dup_threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def prepare_corpus(docs: DataFrame) -> DataFrame:
     """Cleaned corpus: (doc_id, n_ws_tokens, n_re_tokens, n_chars,
     quality_score) for every surviving document.
 
     Stages (all lazy, one composed plan):
-    1. quality gate: drop docs scoring below ``min_quality``;
+    1. quality gate: drop docs scoring below 0.5;
     2. exact dedup (hash-groupBy keep-first) on the survivors;
-    3. near-dup dedup: MinHash/LSH pairs at ``near_dup_threshold``,
+    3. near-dup dedup: MinHash/LSH pairs at Jaccard 0.5,
        drop the max-id side of each pair;
     4. token stats on what remains.
     """
@@ -76,12 +62,10 @@ def prepare_corpus(
     # on `exact` AFTER dropping the text column is the right variant.
     # quality_score rides along from the gate onward: the quality subtree
     # is in the plan once, not re-joined (and thus recomputed) at the end.
-    _, _, survivors = _corpus_stages(
-        docs, min_quality, near_dup_threshold, text_col, id_col
-    )
-    t = F.col(text_col)
+    _, _, survivors = _corpus_stages(docs)
+    t = F.col("text")
     return survivors.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(words(t)).cast("long").alias("n_ws_tokens"),
         F.regexp_count(t, F.lit(TOKEN_RE)).cast("long").alias("n_re_tokens"),
         F.length(t).cast("long").alias("n_chars"),
@@ -89,13 +73,7 @@ def prepare_corpus(
     )
 
 
-def pipeline_funnel(
-    docs: DataFrame,
-    min_quality: float = 0.5,
-    near_dup_threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def pipeline_funnel(docs: DataFrame) -> DataFrame:
     """Observability for :func:`prepare_corpus`: (stage, n_surviving) for
     raw -> quality gate -> exact dedup -> near-dup dedup.
 
@@ -115,9 +93,7 @@ def pipeline_funnel(
     loser join; the stages the fold would deduplicate (raw + gate
     counts) are the cheap ones. Keep the union form.
     """
-    gated, exact, survivors = _corpus_stages(
-        docs, min_quality, near_dup_threshold, text_col, id_col
-    )
+    gated, exact, survivors = _corpus_stages(docs)
     stages = [
         ("0_raw", docs),
         ("1_quality_gate", gated),

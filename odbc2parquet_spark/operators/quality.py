@@ -150,15 +150,9 @@ def dq_check(df: DataFrame, rules: list[Rule]) -> DataFrame:
     return out.withColumn("pass_", F.col("n_violations") == 0)
 
 
-def winsorize(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    lo: float = 0.05,
-    hi: float = 0.95,
-) -> DataFrame:
+def winsorize(df: DataFrame, value_col: str, group_col: str) -> DataFrame:
     """Per-group robust outlier clipping: value clamped to that group's
-    exact [lo, hi] percentile band (winsorization — the standard
+    exact [5%, 95%] percentile band (winsorization — the standard
     heavy-tail taming step before scaling/averaging a feature).
 
     Two passes over the data, both linear: one groupBy computing the
@@ -173,8 +167,8 @@ def winsorize(
     Adds columns ``p_lo``, ``p_hi``, ``<value_col>_w`` (clipped value).
     """
     stats = df.groupBy(group_col).agg(
-        F.round(F.expr(f"percentile({value_col}, {lo})"), 6).alias("p_lo"),
-        F.round(F.expr(f"percentile({value_col}, {hi})"), 6).alias("p_hi"),
+        F.round(F.expr(f"percentile({value_col}, 0.05)"), 6).alias("p_lo"),
+        F.round(F.expr(f"percentile({value_col}, 0.95)"), 6).alias("p_hi"),
     )
     v = F.col(value_col)
     return df.join(F.broadcast(stats), group_col).withColumn(
@@ -259,12 +253,7 @@ def l_diversity_audit(
     )
 
 
-def mad_outliers(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    k: float = 4.4478,
-) -> DataFrame:
+def mad_outliers(df: DataFrame, value_col: str, group_col: str) -> DataFrame:
     """Robust per-group outlier detection via median absolute deviation:
     flag rows with |x - median| > k * MAD (k = 4.4478 ~ 3 sigma under
     normality via the 1.4826 consistency constant). The robust twin of
@@ -286,5 +275,5 @@ def mad_outliers(
         F.round(F.expr(f"percentile(abs({value_col} - med), 0.5)"), 6).alias("mad")
     )
     return df.join(F.broadcast(mad), group_col).withColumn(
-        f"{value_col}_outlier", F.abs(v - F.col("med")) > F.lit(k) * F.col("mad")
+        f"{value_col}_outlier", F.abs(v - F.col("med")) > F.lit(4.4478) * F.col("mad")
     )

@@ -21,21 +21,15 @@ from pyspark.sql import functions as F
 GRANULARITIES = {"5 minutes": 300, "1 hour": 3600, "1 day": 86400}
 
 
-def bucket_aggregate(
-    events: DataFrame,
-    width: str = "5 minutes",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
+def bucket_aggregate(events: DataFrame, width: str = "5 minutes") -> DataFrame:
     """Finest-level aggregate from raw events: (bucket_start, key, n, sum)."""
     secs = GRANULARITIES[width]
-    bucket = (F.unix_seconds(F.col(ts_col).cast("timestamp")) / secs).cast("long") * secs
+    bucket = (F.unix_seconds(F.col("ts").cast("timestamp")) / secs).cast("long") * secs
     return events.groupBy(
-        bucket.alias("bucket_start"), F.col(key_col).alias("key")
+        bucket.alias("bucket_start"), F.col("event_type").alias("key")
     ).agg(
         F.count("*").alias("n"),
-        F.sum(F.col(value_col).cast("decimal(18,6)")).alias("sum_value"),
+        F.sum(F.col("value").cast("decimal(18,6)")).alias("sum_value"),
     )
 
 
@@ -50,31 +44,19 @@ def coarsen(agg: DataFrame, to_width: str) -> DataFrame:
     )
 
 
-def rollup_cascade(
-    events: DataFrame,
-    widths: tuple[str, ...] = ("5 minutes", "1 hour", "1 day"),
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    value_col: str = "value",
-) -> dict[str, DataFrame]:
-    """All granularities, each computed from the previous level."""
+def rollup_cascade(events: DataFrame) -> dict[str, DataFrame]:
+    """The 5-minute, 1-hour and 1-day aggregates, each computed from the
+    previous level."""
     out: dict[str, DataFrame] = {}
-    cur = bucket_aggregate(events, widths[0], ts_col, key_col, value_col)
-    out[widths[0]] = cur
-    for w in widths[1:]:
+    cur = bucket_aggregate(events)
+    out["5 minutes"] = cur
+    for w in ("1 hour", "1 day"):
         cur = coarsen(cur, w)
         out[w] = cur
     return out
 
 
-def resample_forward_fill(
-    events: DataFrame,
-    bucket_seconds: int = 86400,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    id_col: str = "event_id",
-) -> DataFrame:
+def resample_forward_fill(events: DataFrame, bucket_seconds: int = 86400) -> DataFrame:
     """Regular-grid resampling with forward fill: for every key, one row
     per ``bucket_seconds`` bucket from its first to its last event, carrying
     the most recent observed value at or before the bucket's end (the
@@ -90,10 +72,10 @@ def resample_forward_fill(
     """
     us = int(bucket_seconds) * 1_000_000
     ev = events.select(
-        F.col(key_col).alias("key"),
-        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("ts_us"),
-        F.col(id_col).alias("id"),
-        F.col(value_col).alias("v"),
+        F.col("user_id").alias("key"),
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
+        F.col("event_id").alias("id"),
+        F.col("value").alias("v"),
     ).withColumn("bucket", F.floor(F.col("ts_us") / F.lit(us)).cast("long"))
     bounds = ev.groupBy("key").agg(
         F.min("bucket").alias("b0"), F.max("bucket").alias("b1")
@@ -121,7 +103,7 @@ def resample_forward_fill(
         grid.join(per_bucket, ["key", "bucket"], "left")
         .withColumn("filled_value", F.last("bucket_last", ignorenulls=True).over(w_ff))
         .select(
-            F.col("key").alias(key_col),
+            F.col("key").alias("user_id"),
             "bucket",
             "filled_value",
             F.col("bucket_last").isNotNull().alias("observed"),
@@ -169,14 +151,7 @@ def merge_agg_states(a: DataFrame, b: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-def resample_interpolate(
-    events: DataFrame,
-    bucket_seconds: int = 86400,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    id_col: str = "event_id",
-) -> DataFrame:
+def resample_interpolate(events: DataFrame, bucket_seconds: int = 86400) -> DataFrame:
     """Regular-grid resampling with LINEAR interpolation: gap buckets get
     ``vp + (vn - vp) * (b - bp) / (bn - bp)`` between the neighboring
     observations; leading/trailing gaps fall back to back/forward fill.
@@ -189,9 +164,9 @@ def resample_interpolate(
     arithmetic on already-joined rows — no extra shuffle.
     """
     base = resample_forward_fill(
-        events, bucket_seconds, key_col, ts_col, value_col, id_col
+        events, bucket_seconds
     ).select(
-        F.col(key_col).alias("key"),
+        F.col("user_id").alias("key"),
         "bucket",
         F.when(F.col("observed"), F.col("filled_value")).alias("obs_v"),
         "observed",
@@ -229,21 +204,15 @@ def resample_interpolate(
         .otherwise(F.lit("interp"))
     )
     return stepped.select(
-        F.col("key").alias(key_col),
+        F.col("key").alias("user_id"),
         "bucket",
         F.round(value, 6).alias("value"),
         kind.alias("kind"),
     )
 
 
-def ewma_last_n(
-    df: DataFrame,
-    key_col: str,
-    order_cols: list[str],
-    value_col: str,
-    n: int = 8,
-) -> DataFrame:
-    """Exponentially weighted moving average over the last ``n``
+def ewma_last_n(df: DataFrame, key_col: str, order_cols: list[str], value_col: str) -> DataFrame:
+    """Exponentially weighted moving average over the last 8
     observations per key, decay 1/2 — the freshness-decayed engagement /
     rate metric every event pipeline keeps per user.
 
@@ -256,32 +225,26 @@ def ewma_last_n(
     fudge. Adjusted (pandas ewm adjust=True) semantics at series heads:
     missing lags drop out of BOTH numerator and denominator.
 
-    One window (hash shuffle on the key) and n LAGs — no self-joins, no
+    One window (hash shuffle on the key) and 7 LAGs — no self-joins, no
     per-key collect; scales as a single keyed exchange.
     """
     from pyspark.sql import Window
 
     w = Window.partitionBy(key_col).orderBy(*order_cols)
     lags = [F.col(value_col)] + [
-        F.lag(value_col, i).over(w) for i in range(1, n)
+        F.lag(value_col, i).over(w) for i in range(1, 8)
     ]
     num = F.lit(0.0)
     den = F.lit(0)
     for i, lg in enumerate(lags):
-        wt = 1 << (n - 1 - i)  # 2^(n-1), 2^(n-2), ..., 1
+        wt = 1 << (7 - i)  # 2^7, 2^6, ..., 1
         num = num + F.coalesce(lg, F.lit(0.0)) * F.lit(float(wt))
         den = den + F.when(lg.isNull(), F.lit(0)).otherwise(F.lit(wt))
     return df.withColumn("ewma", num / den)
 
 
-def rolling_trend(
-    df: DataFrame,
-    key_col: str,
-    order_cols: list[str],
-    value_col: str,
-    n: int = 8,
-) -> DataFrame:
-    """Per-key rolling OLS slope over the trailing ``n`` observations —
+def rolling_trend(df: DataFrame, key_col: str, order_cols: list[str], value_col: str) -> DataFrame:
+    """Per-key rolling OLS slope over the trailing 8 observations —
     the linear-trend detector (is this user's metric rising or falling,
     and how fast) complementing ewma_last_n's level tracker.
 
@@ -297,7 +260,7 @@ def rolling_trend(
     One keyed window, two passes of column arithmetic, no joins.
     """
     wk = Window.partitionBy(key_col).orderBy(*order_cols)
-    frame = wk.rowsBetween(-(n - 1), 0)
+    frame = wk.rowsBetween(-7, 0)
     x = F.row_number().over(wk)
     base = df.withColumn("_x_", x).withColumn(
         "_y_", F.col(value_col).cast("decimal(18,6)")
@@ -328,46 +291,34 @@ def rolling_trend(
     )
 
 
-def _daily_series(
-    daily: DataFrame, group_col: str, day_col: str, value_col: str
-) -> DataFrame:
-    """(group, series): each group's (d, x) structs in day order — the
+def _daily_series(daily: DataFrame) -> DataFrame:
+    """(key, series): each key's (d, x) structs in day order — the
     input every Holt fold below reads."""
-    return daily.groupBy(group_col).agg(
+    return daily.groupBy("key").agg(
         F.array_sort(
-            F.collect_list(
-                F.struct(F.col(day_col).alias("d"), F.col(value_col).alias("x"))
-            )
+            F.collect_list(F.struct(F.col("day").alias("d"), F.col("x")))
         ).alias("series")
     )
 
 
-def _fit(
-    arr: DataFrame, group_col: str, zero: F.Column, step
-) -> tuple[DataFrame, list[F.Column]]:
-    """Fold each group's series with ``step`` from ``zero``: the frame
-    (group, n_days, st) and its first output columns (group, n_days, and
+def _fit(arr: DataFrame, zero: F.Column, step) -> tuple[DataFrame, list[F.Column]]:
+    """Fold each key's series with ``step`` from ``zero``: the frame
+    (key, n_days, st) and its first output columns (key, n_days, and
     level and trend rounded to 6)."""
     fitted = arr.select(
-        group_col,
+        "key",
         F.size("series").alias("n_days"),
         F.aggregate(F.col("series"), zero, step).alias("st"),
     )
     return fitted, [
-        F.col(group_col),
+        F.col("key"),
         F.col("n_days").cast("long").alias("n_days"),
         F.round(F.col("st.l"), 6).alias("level"),
         F.round(F.col("st.b"), 6).alias("trend"),
     ]
 
 
-def holt_forecast(
-    daily: DataFrame,
-    group_col: str = "key",
-    day_col: str = "day",
-    value_col: str = "x",
-    horizons: tuple[int, ...] = (1, 7),
-) -> DataFrame:
+def holt_forecast(daily: DataFrame) -> DataFrame:
     """Holt's linear-trend exponential smoothing with alpha = beta = 1/2
     — the dyadic choice is deliberate: halving a double is ALWAYS exact
     in IEEE 754, so the recursion
@@ -378,7 +329,7 @@ def holt_forecast(
     is a fixed left-to-right sequence of adds and exact halvings any
     engine replays bit-identically (the ewma_last_n contract, extended
     to a 2-state recursion). Initialization: level = x_1, trend = 0.
-    Forecast f_h = level_n + h * trend_n.
+    Forecast f_h = level_n + h * trend_n for h = 1 and 7.
 
     The recursion is inherently sequential per group, so each group's
     daily series (calendar-sized — ~365 rows/year however big the raw
@@ -387,7 +338,7 @@ def holt_forecast(
     loop; groups parallelize across tasks. Emits (group, n_days, level,
     trend, f_<h>...) rounded to 6.
     """
-    arr = _daily_series(daily, group_col, day_col, value_col)
+    arr = _daily_series(daily)
     zero = F.struct(
         F.lit(None).cast("double").alias("l"),
         F.lit(0.0).alias("b"),
@@ -403,30 +354,30 @@ def holt_forecast(
         )
         return F.struct(l_new.alias("l"), b_new.alias("b"))
 
-    fitted, cols = _fit(arr, group_col, zero, step)
-    for h in horizons:
+    fitted, cols = _fit(arr, zero, step)
+    for h in (1, 7):
         cols.append(
             F.round(F.col("st.l") + F.lit(float(h)) * F.col("st.b"), 6).alias(f"f{h}")
         )
     return fitted.select(*cols)
 
 
-def _hw_fold(period: int):
+def _hw_fold():
     """(zero, step) of the additive Holt-Winters fold with alpha = beta =
     gamma = 1/2 (the recursion :func:`holt_winters_forecast` documents):
-    accumulator (l, b, s, t) = level, trend, ``period`` seasonal slots and
+    accumulator (l, b, s, t) = level, trend, 7 seasonal slots and
     the count of folded days."""
     zero = F.struct(
         F.lit(None).cast("double").alias("l"),
         F.lit(0.0).alias("b"),
-        F.array_repeat(F.lit(0.0), period).alias("s"),
+        F.array_repeat(F.lit(0.0), 7).alias("s"),
         F.lit(0).alias("t"),
     )
 
     def step(acc: F.Column, e: F.Column) -> F.Column:
         x = e.getField("x").cast("double")
         t = acc.getField("t")
-        idx = t % period
+        idx = t % 7
         sp = F.element_at(acc.getField("s"), idx + 1)
         first = acc.getField("l").isNull()
         l_prev, b_prev = acc.getField("l"), acc.getField("b")
@@ -450,20 +401,13 @@ def _hw_fold(period: int):
     return zero, step
 
 
-def holt_winters_forecast(
-    daily: DataFrame,
-    group_col: str = "key",
-    day_col: str = "day",
-    value_col: str = "x",
-    period: int = 7,
-    horizons: tuple[int, ...] = (1, 7),
-) -> DataFrame:
+def holt_winters_forecast(daily: DataFrame, horizons: tuple[int, ...] = (1, 7)) -> DataFrame:
     """Holt-Winters ADDITIVE seasonal smoothing with alpha = beta =
     gamma = 1/2 — :func:`holt_forecast`'s two-state dyadic recursion
-    extended with a ``period``-slot seasonal state, completing the
+    extended with a 7-slot (weekly) seasonal state, completing the
     classical smoothing ladder (EWMA -> Holt -> Holt-Winters):
 
-        idx_t   = (t - 1) mod period
+        idx_t   = (t - 1) mod 7
         level_t = ((x_t - s_idx) + (level + trend)) / 2
         trend_t = ((level_t - level_{t-1}) + trend_{t-1}) / 2
         s_idx'  = ((x_t - level_t) + s_idx) / 2
@@ -472,18 +416,18 @@ def holt_winters_forecast(
     fixed left-to-right order, so any engine replays the fold
     bit-identically; seeds are level = x_1, trend = 0, seasonal all 0
     (the first pass through each slot then learns half the residual).
-    Forecast f_h = level + h*trend + s[(n-1+h) mod period].
+    Forecast f_h = level + h*trend + s[(n-1+h) mod 7].
 
     Same scale shape as holt_forecast: each group's calendar-sized daily
     series folds inside ONE Catalyst ``aggregate`` expression (the
     seasonal array rides in the accumulator struct) — no per-step
     shuffle, no driver loop; groups parallelize across tasks.
     """
-    arr = _daily_series(daily, group_col, day_col, value_col)
-    zero, step = _hw_fold(period)
-    fitted, cols = _fit(arr, group_col, zero, step)
+    arr = _daily_series(daily)
+    zero, step = _hw_fold()
+    fitted, cols = _fit(arr, zero, step)
     for h in horizons:
-        slot = (F.col("n_days") - 1 + h) % period
+        slot = (F.col("n_days") - 1 + h) % 7
         cols.append(
             F.round(
                 F.col("st.l")
@@ -495,18 +439,11 @@ def holt_winters_forecast(
     return fitted.select(*cols)
 
 
-def hw_backtest(
-    daily: DataFrame,
-    group_col: str = "key",
-    day_col: str = "day",
-    value_col: str = "x",
-    period: int = 7,
-    n_origins: int = 3,
-) -> DataFrame:
+def hw_backtest(daily: DataFrame) -> DataFrame:
     """(group, origin, f1_6, actual, abs_err6, naive_err6): ROLLING-ORIGIN
     backtest of the Holt-Winters fold — the measurement that turns "we
     fit a forecaster" into "we know its skill": for each of the last
-    ``n_origins`` days, fit on everything STRICTLY BEFORE it (the same
+    3 days, fit on everything STRICTLY BEFORE it (the same
     dyadic fold as :func:`holt_winters_forecast`, on the sliced prefix),
     forecast one step, and report the absolute error next to the
     seasonal-naive-1 baseline (yesterday's value) — the skill ratio a
@@ -519,19 +456,19 @@ def hw_backtest(
     the forecast is the dyadic state plus one add; errors subtract exact
     inputs — no new float risk beyond the certified fold.
     """
-    arr = _daily_series(daily, group_col, day_col, value_col)
-    zero, step = _hw_fold(period)
+    arr = _daily_series(daily)
+    zero, step = _hw_fold()
 
     n = F.size("series")
     origins = F.sequence(
-        F.greatest(n - n_origins + 1, F.lit(2)), n
+        F.greatest(n - 2, F.lit(2)), n
     )  # 1-based target indexes, needing >= 1 prior day
     # Guard n == 1: sequence(2, 1) is DESCENDING in Spark ([2, 1]), which
     # would emit a spurious origin=2 row with NULL actual (element_at past
     # the array end) while the DuckDB oracle emits nothing. Requiring
     # tgt <= size(series) alongside tgt >= 2 makes both engines agree.
     ex = arr.select(
-        group_col, "series", F.explode(origins).alias("tgt")
+        "key", "series", F.explode(origins).alias("tgt")
     ).filter((F.col("tgt") >= 2) & (F.col("tgt") <= F.size("series")))
     st = F.aggregate(
         F.slice(F.col("series"), 1, F.col("tgt") - 1), zero, step
@@ -539,12 +476,12 @@ def hw_backtest(
     f1 = (
         st.getField("l")
         + F.lit(1.0) * st.getField("b")
-        + F.element_at(st.getField("s"), (st.getField("t") % period) + 1)
+        + F.element_at(st.getField("s"), (st.getField("t") % 7) + 1)
     )
     actual = F.element_at(F.col("series"), F.col("tgt")).getField("x")
     naive = F.element_at(F.col("series"), F.col("tgt") - 1).getField("x")
     return ex.select(
-        group_col,
+        "key",
         F.col("tgt").cast("long").alias("origin"),
         F.round(f1, 6).alias("f1_6"),
         actual.cast("double").alias("actual"),

@@ -275,12 +275,7 @@ def reservoir_sample(
     )
 
 
-def purged_time_split(
-    df: DataFrame,
-    ts_us_col: str,
-    train_frac_tenths: int = 8,
-    embargo_us: int = 86_400_000_000,
-) -> DataFrame:
+def purged_time_split(df: DataFrame, ts_us_col: str, embargo_us: int = 86_400_000_000) -> DataFrame:
     """Leakage-safe temporal train/test split with an embargo gap (the
     purged split of Lopez de Prado 2018, ch.7): train = rows at or
     before the cutoff, test = rows after cutoff + embargo, and rows
@@ -288,7 +283,7 @@ def purged_time_split(
     (EWMAs, rolling stats) on test rows can never see train-period
     events. A plain temporal split leaks through exactly that channel.
 
-    The cutoff is min + (range * train_frac_tenths) DIV 10 in exact
+    The cutoff is min + (range * 8) DIV 10 in exact
     integer microseconds (a tenths fraction keeps the boundary
     engine-exact — 0.8 * a 10^14-µs range in doubles would round), from
     a 1-row (min, max) broadcast; the labeling is a codegen'd CASE.
@@ -303,9 +298,7 @@ def purged_time_split(
     # BIGINT) truncates while DuckDB's rounds to nearest, and
     # (range*8)/10 has fractional part in {0,.2,.4,.6,.8}, so ~40% of
     # ranges would put the two engines' cutoffs 1µs apart.
-    cutoff = F.col("_mn_") + F.expr(
-        f"((_mx_ - _mn_) * {int(train_frac_tenths)}) div 10"
-    )
+    cutoff = F.col("_mn_") + F.expr("((_mx_ - _mn_) * 8) div 10")
     split = (
         F.when(ts <= cutoff, F.lit("train"))
         .when(ts > cutoff + F.lit(embargo_us), F.lit("test"))
@@ -323,14 +316,9 @@ def purged_time_split(
     )
 
 
-def kfold_assign(
-    df: DataFrame,
-    key_col: str,
-    n_folds: int = 5,
-    strata_col: str | None = None,
-) -> DataFrame:
+def kfold_assign(df: DataFrame, key_col: str, strata_col: str | None = None) -> DataFrame:
     """Deterministic k-fold cross-validation assignment: fold =
-    md5_60(key) % n_folds — a pure row function like every sampler here,
+    md5_60(key) % 5 — a pure row function like every sampler here,
     so folds are reproducible across runs, partitionings, and engines,
     and any fold's complement is recoverable without storing assignments.
     Balance holds in expectation (hash uniformity), NOT by per-stratum
@@ -341,7 +329,7 @@ def kfold_assign(
     evidence the balance claim rests on; apply the same fold expression
     upstream to materialize row-level assignments.
     """
-    fold = (_hash60(F.col(key_col)) % n_folds).alias("fold")
+    fold = (_hash60(F.col(key_col)) % 5).alias("fold")
     cols = ([F.col(strata_col)] if strata_col else []) + [fold]
     names = ([strata_col] if strata_col else []) + ["fold"]
     return df.select(*cols).groupBy(*names).agg(F.count("*").alias("n_rows"))

@@ -26,9 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def kth_smallest(
-    df: DataFrame, col: str, k: int, bins: int = 1024, max_rounds: int = 64
-) -> float:
+def kth_smallest(df: DataFrame, col: str, k: int, bins: int = 1024) -> float:
     """The exact k-th smallest (1-based) non-null value of ``col``.
 
     Raises ``ValueError`` when k is out of range. The value returned is
@@ -45,7 +43,7 @@ def kth_smallest(
         raise ValueError(f"rank {k} out of range for {n} non-null rows")
     # rank within the current [lo, hi] slice: k minus rows strictly below lo
     rank = k
-    for _ in range(max_rounds):
+    for _ in range(64):
         if lo == hi:
             return lo
         width = (hi - lo) / bins
@@ -71,7 +69,7 @@ def kth_smallest(
                 lo, hi = row["mn"], row["mx"]
                 break
             cum += row["c"]
-    raise RuntimeError("selection did not converge (max_rounds exceeded)")
+    raise RuntimeError("selection did not converge in 64 rounds")
 
 
 def exact_median(df: DataFrame, col: str) -> DataFrame:

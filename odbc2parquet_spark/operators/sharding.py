@@ -23,18 +23,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def pack_shards(
-    docs_with_tokens: DataFrame,
-    budget: int,
-    order_col: str = "doc_id",
-    tokens_col: str = "n_tokens",
-) -> DataFrame:
-    """(order_col, tokens, shard): global-window reference implementation."""
-    w = Window.orderBy(order_col).rowsBetween(Window.unboundedPreceding, -1)
-    prefix = F.coalesce(F.sum(tokens_col).over(w), F.lit(0))
+def pack_shards(docs_with_tokens: DataFrame, budget: int) -> DataFrame:
+    """(doc_id, n_tokens, shard): global-window reference implementation."""
+    w = Window.orderBy("doc_id").rowsBetween(Window.unboundedPreceding, -1)
+    prefix = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
     return docs_with_tokens.select(
-        order_col,
-        F.col(tokens_col),
+        "doc_id",
+        F.col("n_tokens"),
         F.floor(prefix / F.lit(budget)).cast("long").alias("shard"),
     )
 
@@ -43,7 +38,6 @@ def pack_shards_two_pass(
     docs_with_tokens: DataFrame,
     budget: int,
     order_col: str = "doc_id",
-    tokens_col: str = "n_tokens",
     num_partitions: int = 32,
 ) -> DataFrame:
     """Same output as :func:`pack_shards` without the global-window funnel.
@@ -65,10 +59,10 @@ def pack_shards_two_pass(
     with_pid = docs_with_tokens.withColumn(
         "_pid_", order_bucket_col(docs_with_tokens, order_col, num_partitions)
     )
-    offs, _ = bucket_offsets(with_pid, [tokens_col])
+    offs, _ = bucket_offsets(with_pid, ["n_tokens"])
     offset_df = F.broadcast(
         spark.createDataFrame(
-            [(pid, off) for pid, off in offs[tokens_col].items()]
+            [(pid, off) for pid, off in offs["n_tokens"].items()]
             or [(0, 0)],  # empty input: harmless 1-row offset table
             ["_pid_", "_offset_"],
         )
@@ -79,12 +73,12 @@ def pack_shards_two_pass(
         .orderBy(order_col)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    local_prefix = F.coalesce(F.sum(tokens_col).over(wl), F.lit(0))
+    local_prefix = F.coalesce(F.sum("n_tokens").over(wl), F.lit(0))
     return (
         with_pid.join(offset_df, "_pid_")
         .select(
             order_col,
-            F.col(tokens_col),
+            F.col("n_tokens"),
             F.floor((local_prefix + F.col("_offset_")) / F.lit(budget))
             .cast("long")
             .alias("shard"),
@@ -92,15 +86,10 @@ def pack_shards_two_pass(
     )
 
 
-def epoch_shuffle(
-    docs: DataFrame,
-    n_epochs: int = 2,
-    n_shards: int = 8,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def epoch_shuffle(docs: DataFrame, n_shards: int = 8) -> DataFrame:
     """Deterministic per-epoch training order: (epoch, doc_id, shard, pos).
 
-    Every epoch gets an independent pseudo-random permutation without any
+    Each of the 2 epochs gets an independent pseudo-random permutation without any
     RNG state: shard = md5(epoch:doc) mod n_shards (pure hash — no
     shuffle beyond the final per-shard rank), position = rank of the md5
     key within the (epoch, shard) partition. Shards are the unit of
@@ -109,20 +98,20 @@ def epoch_shuffle(
     The per-shard window ranks only corpus/n_shards rows per task — there
     is no global sort.
     """
-    epochs = F.explode(F.sequence(F.lit(0), F.lit(n_epochs - 1))).alias("epoch")
-    keyed = docs.select(F.col(id_col), epochs).select(
+    epochs = F.explode(F.sequence(F.lit(0), F.lit(1))).alias("epoch")
+    keyed = docs.select("doc_id", epochs).select(
         "epoch",
-        F.col(id_col),
-        F.md5(F.concat_ws(":", F.col("epoch"), F.col(id_col))).alias("_key_"),
+        F.col("doc_id"),
+        F.md5(F.concat_ws(":", F.col("epoch"), F.col("doc_id"))).alias("_key_"),
     )
     shard = (
         F.conv(F.substring("_key_", 1, 8), 16, 10).cast("long") % n_shards
     ).alias("shard")
-    keyed = keyed.select("epoch", id_col, "_key_", shard)
+    keyed = keyed.select("epoch", "doc_id", "_key_", shard)
     w = Window.partitionBy("epoch", "shard").orderBy("_key_")
     return keyed.select(
         "epoch",
-        id_col,
+        "doc_id",
         "shard",
         F.row_number().over(w).cast("long").alias("pos"),
     )

@@ -25,58 +25,31 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 
-def _fold_sum(arr: F.Column, dim: int | None = None) -> F.Column:
-    """Left-fold sum of a double array (deterministic order).
+def _fold_sum(arr: F.Column) -> F.Column:
+    """Left-fold sum of a double array (deterministic order) as one
+    Catalyst ``aggregate``.
 
-    ``dim`` unrolls the fold into a literal chain of ``dim`` additions.
-    Trade-off, measured at sf0.1 (round 11): Catalyst higher-order
-    functions are CodegenFallback — interpreted per element with boxing
-    — so the unrolled chain EXECUTES ~3x faster; but the 64-term tree
-    costs ~1s of driver-side analysis/optimization per action where the
-    HOF form costs ~0.2s. Unrolling therefore wins only where the
-    per-element work dominates (hundreds of thousands of pairs or more
-    behind one action: the medoid pairwise pass, the all-pairs cosine
-    verification arm) and LOSES on small-cardinality expressions
-    (ivf_assign's corpus x 16 scoring measured 0.5s HOF vs 1.1s
-    unrolled, all of it planning). Fold order is the same left fold, so
-    results are bit-identical WHEN the array length equals ``dim`` (a
-    short array yields NULL instead of a partial sum — the louder
-    failure). ``dim=None`` keeps the generic interpreted form."""
-    if dim is None:
-        return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
-    acc = F.lit(0.0)
-    for k in range(dim):
-        acc = acc + F.get(arr, F.lit(k))
-    return acc
+    Measured at sf0.1 (round 11): a literal chain of per-index additions
+    EXECUTES ~3x faster (higher-order functions are CodegenFallback,
+    interpreted per element with boxing), but its 64-term tree costs ~1s
+    of driver-side analysis/optimization per action where this form
+    costs ~0.2s (ivf_assign's corpus x 16 scoring: 0.5s here vs 1.1s
+    unrolled, all of it planning)."""
+    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def dot(a: F.Column, b: F.Column, dim: int | None = None) -> F.Column:
-    """Dot product; ``dim`` unrolls (see :func:`_fold_sum` trade-off)."""
-    if dim is None:
-        return _fold_sum(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-        )
-    acc = F.lit(0.0)
-    for k in range(dim):
-        acc = acc + F.get(a, F.lit(k)).cast("double") * F.get(b, F.lit(k)).cast(
-            "double"
-        )
-    return acc
+def dot(a: F.Column, b: F.Column) -> F.Column:
+    """Dot product (see :func:`_fold_sum`)."""
+    return _fold_sum(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")))
 
 
-def norm_sq(a: F.Column, dim: int | None = None) -> F.Column:
-    """Squared L2 norm; ``dim`` unrolls (see :func:`_fold_sum`)."""
-    if dim is None:
-        return _fold_sum(F.transform(a, lambda x: x.cast("double") * x.cast("double")))
-    acc = F.lit(0.0)
-    for k in range(dim):
-        x = F.get(a, F.lit(k)).cast("double")
-        acc = acc + x * x
-    return acc
+def norm_sq(a: F.Column) -> F.Column:
+    """Squared L2 norm (see :func:`_fold_sum`)."""
+    return _fold_sum(F.transform(a, lambda x: x.cast("double") * x.cast("double")))
 
 
-def cosine(a: F.Column, b: F.Column, dim: int | None = None) -> F.Column:
-    return dot(a, b, dim) / F.sqrt(norm_sq(a, dim) * norm_sq(b, dim))
+def cosine(a: F.Column, b: F.Column) -> F.Column:
+    return dot(a, b) / F.sqrt(norm_sq(a) * norm_sq(b))
 
 
 def _checked_dim(vec: F.Column, dim: int, where: str) -> F.Column:
@@ -115,13 +88,7 @@ def _cosine_rank(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def brute_force_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact cosine top-k per query vector.
 
     Broadcasts the (small) query side; corpus partitioning untouched —
@@ -133,15 +100,15 @@ def brute_force_topk(
     """
     q = F.broadcast(
         queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            norm_sq(F.col(vec_col)).alias("qnsq"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("qvec"),
+            norm_sq(F.col("embedding")).alias("qnsq"),
         )
     )
     v = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nvec"),
-        norm_sq(F.col(vec_col)).alias("nnsq"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("nvec"),
+        norm_sq(F.col("embedding")).alias("nnsq"),
     )
     scored = (
         v.join(q, F.col("query_id") != F.col("neighbor_id"))
@@ -174,13 +141,7 @@ def hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
     return planes
 
 
-def lsh_signatures(
-    vectors: DataFrame,
-    n_planes: int = 16,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def lsh_signatures(vectors: DataFrame, n_planes: int = 16, dim: int = 64) -> DataFrame:
     """b-bit random-hyperplane signature per vector: (vec_id, sig).
 
     One narrow projection pass, no shuffle; signatures feed the bucket
@@ -192,7 +153,7 @@ def lsh_signatures(
     # of n_planes unrolled aggregate folds — same signatures (bit j set
     # iff dot(v, plane_j) > 0), ~n_planes-times smaller expression tree.
     mat = F.array(*[F.array(*[F.lit(x) for x in plane]) for plane in planes])
-    vec = _checked_dim(F.col(vec_col), dim, "lsh_signatures")
+    vec = _checked_dim(F.col("embedding"), dim, "lsh_signatures")
     bits = F.transform(
         mat,
         lambda plane, j: F.when(
@@ -204,7 +165,7 @@ def lsh_signatures(
     # measured a wash-to-slightly-worse on the composed consumers —
     # sim_lsh_bucket_pairs 1.28->1.39 — the projection is cheap enough
     # that the extra exchange is not repaid; left on the natural layout)
-    return vectors.select(F.col(id_col).alias("vec_id"), sig.alias("sig"))
+    return vectors.select(F.col("vec_id"), sig.alias("sig"))
 
 
 def cap_buckets(bucketed: DataFrame, bucket_cols: list[str], max_bucket: int) -> DataFrame:
@@ -309,12 +270,7 @@ def banded_hamming_pairs(
     )
 
 
-def derived_prefix_bits(
-    n_vectors: int,
-    target_occupancy: int = 64,
-    min_bits: int = 4,
-    max_bits: int = 24,
-) -> int:
+def derived_prefix_bits(n_vectors: int, target_occupancy: int = 64, max_bits: int = 24) -> int:
     """Occupancy-scaled LSH bucket width: hold expected per-bucket
     occupancy constant as the corpus grows (buckets ~ n / target_occupancy,
     so prefix_bits = ceil(log2(n / target_occupancy)), clamped).
@@ -341,9 +297,9 @@ def derived_prefix_bits(
     if target_occupancy <= 0:
         raise ValueError(f"target_occupancy must be > 0, got {target_occupancy}")
     if n_vectors == 0:
-        return min_bits
+        return 4
     raw = math.ceil(math.log2(n_vectors / float(target_occupancy)))
-    return min(max_bits, max(min_bits, raw))
+    return min(max_bits, max(4, raw))
 
 
 def lsh_bucket_pairs(
@@ -386,29 +342,27 @@ def lsh_bucket_pairs(
 # search touches nprobe/k_cells of the data instead of all of it.
 
 
-def ivf_seed_centroids(vectors: DataFrame, k_cells: int = 16, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def ivf_seed_centroids(vectors: DataFrame, k_cells: int = 16) -> DataFrame:
     """Deterministic seed centroids: the ``k_cells`` lowest-id vectors.
 
     No RNG so any engine reproduces the index bit-for-bit; refine with
     :func:`ivf_refine_centroids` (Lloyd steps) when quality matters more
     than reproducibility.
     """
-    return vectors.orderBy(id_col).limit(k_cells).select(
-        F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("centroid")
+    return vectors.orderBy("vec_id").limit(k_cells).select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
     )
 
 
-def _centroid_scores(
-    vectors: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
+def _centroid_scores(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """Every (vector, centroid) pair with its 4-decimal cosine ``cos4``:
     centroids broadcast, norms computed once per row before the cross so
     each pair costs one fold."""
     c = F.broadcast(centroids.withColumn("csq", norm_sq(F.col("centroid"))))
     return vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        norm_sq(F.col(vec_col)).alias("vsq"),
+        "vec_id",
+        F.col("embedding").alias("v"),
+        norm_sq(F.col("embedding")).alias("vsq"),
     ).join(c).withColumn(
         "cos4",
         F.round(
@@ -431,12 +385,7 @@ def _unpacked_cos(enc: str) -> F.Column:
     return (F.lit(10000) - F.shiftright(F.col(enc), 43)).cast("double") / F.lit(10000.0)
 
 
-def ivf_assign(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """(vec_id, centroid_id, cos4): each vector's nearest centroid.
 
     Broadcast the centroids (tiny) against the corpus — a map-side join,
@@ -450,7 +399,7 @@ def ivf_assign(
     the centroid_id < 2^43 packing bound. Norms computed once per row
     before the cross: one fold per pair.
     """
-    scored = _centroid_scores(vectors, centroids, id_col, vec_col)
+    scored = _centroid_scores(vectors, centroids)
     enc = F.when(
         (F.col("centroid_id") < 0) | (F.col("centroid_id") >= F.lit(1 << 43)),
         F.expr(
@@ -468,12 +417,7 @@ def ivf_assign(
     )
 
 
-def ivf_silhouette(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_silhouette(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """Per-cell simplified silhouette over an IVF index — the clustering
     QA gate: how well-separated each cell is, from centroid distances
     only (Hruschka et al.'s simplified silhouette — O(N x k_cells), no
@@ -493,7 +437,7 @@ def ivf_silhouette(
     hash-aggregations over the N x k scored rows (best enc, then min enc
     above best), both map-side partial; no sort, no window over the
     corpus."""
-    scored = _centroid_scores(vectors, centroids, id_col, vec_col)
+    scored = _centroid_scores(vectors, centroids)
     from odbc2parquet_spark import cachereg
 
     encs = cachereg.track(scored.select("vec_id", _packed_cos().alias("enc")).persist())
@@ -519,39 +463,25 @@ def ivf_silhouette(
     )
 
 
-def ivf_refine_centroids(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    iterations: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Lloyd refinement: mean of assigned vectors per cell, ``iterations``
-    times. Each step is one broadcast assign + one posexplode/groupBy
-    mean (shuffle keyed on (centroid, dim) — k_cells*dim groups, tiny).
+def ivf_refine_centroids(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
+    """One Lloyd refinement step: the mean of the vectors assigned to each
+    cell. One broadcast assign + one posexplode/groupBy mean (shuffle
+    keyed on (centroid, dim) — k_cells*dim groups, tiny).
 
     The per-cell mean follows the module's determinism contract — exact
     DECIMAL sums (order-independent), ONE final division rounded to 6 —
     by delegating to :func:`label_centroids`, the same step the
     oracle-gated sim_ivf_refine query certifies; a raw float ``avg``
-    here would make the refined index depend on shuffle merge order.
-    Spark-only (iterative; no SQL oracle for the composed loop)."""
-    cur = centroids
-    for _ in range(iterations):
-        assigned = ivf_assign(vectors, cur, id_col, vec_col).join(
-            vectors.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")),
-            "vec_id",
-        )
-        means = assemble_centroids(
-            label_centroids(assigned, label_col="centroid_id", vec_col="v")
-        ).select(
-            F.col("label").alias("centroid_id"),
-            F.transform(F.col("centroid"), lambda x: x.cast("float")).alias(
-                "centroid"
-            ),
-        )
-        cur = means
-    return cur
+    here would make the refined index depend on shuffle merge order."""
+    assigned = ivf_assign(vectors, centroids).join(
+        vectors.select("vec_id", F.col("embedding").alias("v")), "vec_id"
+    )
+    return assemble_centroids(
+        label_centroids(assigned, label_col="centroid_id", vec_col="v")
+    ).select(
+        F.col("label").alias("centroid_id"),
+        F.transform(F.col("centroid"), lambda x: x.cast("float")).alias("centroid"),
+    )
 
 
 def ivf_search(
@@ -560,8 +490,6 @@ def ivf_search(
     centroids: DataFrame,
     nprobe: int = 4,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: score each query against its ``nprobe`` nearest
     cells only.
@@ -571,15 +499,15 @@ def ivf_search(
     against it, so the only corpus-sized operation is one semi-join-like
     broadcast filter + per-query top-k window.
     """
-    assign = ivf_assign(vectors, centroids, id_col, vec_col).select(
+    assign = ivf_assign(vectors, centroids).select(
         F.col("vec_id").alias("neighbor_id"), "centroid_id"
     )
     qprobe = (
-        ivf_probe_cells(queries, centroids, nprobe, id_col, vec_col)
+        ivf_probe_cells(queries, centroids, nprobe)
         .select("query_id", "centroid_id")
     )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    v = vectors.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
+    v = vectors.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nvec"))
     cand = (
         assign.join(F.broadcast(qprobe), "centroid_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -598,17 +526,11 @@ def ivf_search(
     return _cosine_rank(scored, k)
 
 
-def ivf_probe_cells(
-    queries: DataFrame,
-    centroids: DataFrame,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_probe_cells(queries: DataFrame, centroids: DataFrame, nprobe: int = 4) -> DataFrame:
     """(query_id, centroid_id, rank): each query's nprobe nearest cells."""
     c = F.broadcast(centroids)
     scored = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     ).join(c).withColumn("cos4", F.round(cosine(F.col("qv"), F.col("centroid")), 4))
     w = W.partitionBy("query_id").orderBy(F.desc("cos4"), F.asc("centroid_id"))
     return (
@@ -621,9 +543,7 @@ def ivf_probe_cells(
 # ---------------------------------------------------------- storage ops
 
 
-def quantize_int8(
-    vectors: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def quantize_int8(vectors: DataFrame) -> DataFrame:
     """(vec_id, scale, q): symmetric int8 quantization — 4x smaller than
     float32 at ~0.4% max error, the standard storage layout for
     100 TB-scale embedding stores. value ~= q * scale with
@@ -634,10 +554,10 @@ def quantize_int8(
     lambda re-evaluates its whole bound expression per element, so an
     embedded absmax fold would cost O(d²) per row."""
     staged = vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("_v_"),
+        F.col("vec_id"),
+        F.col("embedding").alias("_v_"),
         F.aggregate(
-            F.col(vec_col),
+            F.col("embedding"),
             F.lit(0.0),
             lambda acc, x: F.greatest(acc, F.abs(x.cast("double"))),
         ).alias("_absmax_"),
@@ -657,7 +577,6 @@ def label_centroids(
     vectors: DataFrame,
     label_col: str = "label",
     vec_col: str = "embedding",
-    decimals: int = 6,
 ) -> DataFrame:
     """(label, dim, c): element-wise mean embedding per label — the
     mean-pooled class centroid used for nearest-centroid classification
@@ -665,7 +584,7 @@ def label_centroids(
 
     Determinism across engines: per-(label, dim) sums run on exact
     DECIMAL (order-independent), cast to double only for the final
-    division, rounded to ``decimals``. One posexplode + one groupBy on
+    division, rounded to 6. One posexplode + one groupBy on
     (label, dim) — k*d groups, tiny shuffle regardless of corpus size.
     The exploded scalar form IS the output (narrow, hashable);
     :func:`assemble_centroids` packs it back into arrays for joins.
@@ -682,7 +601,7 @@ def label_centroids(
         .select(
             "label",
             "dim",
-            F.round(F.col("s").cast("double") / F.col("n"), decimals).alias("c"),
+            F.round(F.col("s").cast("double") / F.col("n"), 6).alias("c"),
         )
     )
 
@@ -697,13 +616,7 @@ def assemble_centroids(centroids: DataFrame) -> DataFrame:
     )
 
 
-def centroid_outliers(
-    vectors: DataFrame,
-    top_k: int = 20,
-    id_col: str = "vec_id",
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def centroid_outliers(vectors: DataFrame, top_k: int = 20) -> DataFrame:
     """(vec_id, label, dist, rk): the ``top_k`` vectors farthest from their
     OWN label's centroid, per label — mislabeled/noise candidates for
     embedding-space quality filtering.
@@ -716,17 +629,17 @@ def centroid_outliers(
     on both engines, so the rounded values are bit-identical to the
     oracle's list_sum.
     """
-    cents = assemble_centroids(label_centroids(vectors, label_col, vec_col))
+    cents = assemble_centroids(label_centroids(vectors))
     d2 = _fold_sum(
         F.zip_with(
-            F.col(vec_col),
+            F.col("embedding"),
             F.col("centroid"),
             lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
         )
     )
     w = W.partitionBy("label").orderBy(F.desc("dist"), F.asc("vec_id"))
     return (
-        vectors.select(F.col(id_col).alias("vec_id"), F.col(label_col).alias("label"), F.col(vec_col).alias(vec_col))
+        vectors.select(F.col("vec_id"), F.col("label"), F.col("embedding"))
         .join(F.broadcast(cents), "label")
         .withColumn("dist", F.round(F.sqrt(d2), 4))
         .withColumn("rk", F.row_number().over(w))
@@ -765,7 +678,6 @@ def pq_codebook(
     m: int = 8,
     k: int = 16,
     dim: int = 64,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(subspace, cid, c8): a product-quantization codebook — the vector
@@ -775,9 +687,9 @@ def pq_codebook(
     rebuilds the codebook bit-for-bit; run Lloyd per subspace when recall
     matters more than reproducibility)."""
     sub = _pq_split(dim, m)
-    seeds = vectors.orderBy(id_col).limit(k)
+    seeds = vectors.orderBy("vec_id").limit(k)
     return seeds.select(
-        F.col(id_col).alias("cid"),
+        F.col("vec_id").alias("cid"),
         F.explode(_subspace_melt(vec_col, m, sub, "c8")).alias("sc"),
     ).select("cid", F.col("sc.subspace").alias("subspace"), F.col("sc.c8").alias("c8"))
 
@@ -788,8 +700,6 @@ def pq_refine_codebook(
     m: int = 8,
     dim: int = 64,
     iterations: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Per-subspace Lloyd refinement of a PQ codebook — the quality lever
     over the deterministic low-id seeding: assign codes, replace each
@@ -811,12 +721,12 @@ def pq_refine_codebook(
     cur = codebook
     for _ in range(iterations):
         melted = vectors.select(
-            F.col(id_col).alias("vec_id"),
-            F.explode(_subspace_melt(vec_col, m, sub, "v8")).alias("sv"),
+            F.col("vec_id"),
+            F.explode(_subspace_melt("embedding", m, sub, "v8")).alias("sv"),
         ).select(
             "vec_id", F.col("sv.subspace").alias("subspace"), F.col("sv.v8").alias("v8")
         )
-        codes = pq_assign(vectors, cur, m=m, dim=dim, id_col=id_col, vec_col=vec_col)
+        codes = pq_assign(vectors, cur, m=m, dim=dim)
         assigned = codes.join(melted, ["vec_id", "subspace"]).select(
             "subspace", "code", "v8"
         )
@@ -896,7 +806,6 @@ def pq_assign(
     codebook: DataFrame,
     m: int = 8,
     dim: int = 64,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     arrays=None,
 ) -> DataFrame:
@@ -964,7 +873,7 @@ def pq_assign(
             )
 
     raw = vectors.select(
-        F.col(id_col).cast("long").alias("vec_id"), F.col(vec_col)
+        F.col("vec_id").cast("long").alias("vec_id"), F.col(vec_col)
     ).mapInArrow(assign_batches, "vec_id long, subspace int, code long, d2 double")
     return raw.select(
         "vec_id", "subspace", "code", F.round("d2", 4).alias("dist4")
@@ -1060,8 +969,6 @@ def pq_adc_topk(
     k_centroids: int = 16,
     dim: int = 64,
     top_k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     codebook: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes — the search half of
@@ -1089,15 +996,11 @@ def pq_adc_topk(
     cb = (
         codebook
         if codebook is not None
-        else pq_codebook(
-            vectors, m=m, k=k_centroids, dim=dim, id_col=id_col, vec_col=vec_col
-        )
+        else pq_codebook(vectors, m=m, k=k_centroids, dim=dim)
     )
     cba = _collect_codebook(cb, m, _pq_split(dim, m))
-    codes = pq_assign(
-        vectors, cb, m=m, dim=dim, id_col=id_col, vec_col=vec_col, arrays=cba
-    ).select("vec_id", "subspace", "code")
-    lut = _pq_probe_lut(probes, cb, m, dim, id_col, vec_col, arrays=cba)
+    codes = pq_assign(vectors, cb, m=m, dim=dim, arrays=cba).select("vec_id", "subspace", "code")
+    lut = _pq_probe_lut(probes, cb, m, dim, "vec_id", "embedding", arrays=cba)
     scored = (
         codes.join(F.broadcast(lut), ["subspace", "code"])
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -1114,10 +1017,7 @@ def ivf_pq_search(
     k_cells: int = 16,
     m: int = 8,
     k_centroids: int = 16,
-    dim: int = 64,
     top_k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-PQ: the full billion-scale ANN index — coarse cell routing
     (IVF) composed with code-book distances (ADC over PQ codes).
@@ -1137,17 +1037,13 @@ def ivf_pq_search(
     the per-query top-k window. DECIMAL(20,4) partial sums keep results
     engine-exact.
     """
-    cents = ivf_seed_centroids(vectors, k_cells, id_col, vec_col)
-    cell = ivf_assign(vectors, cents, id_col, vec_col).select("vec_id", "centroid_id")
-    cb = pq_codebook(vectors, m=m, k=k_centroids, dim=dim, id_col=id_col, vec_col=vec_col)
-    cba = _collect_codebook(cb, m, _pq_split(dim, m))
-    codes = pq_assign(
-        vectors, cb, m=m, dim=dim, id_col=id_col, vec_col=vec_col, arrays=cba
-    ).select("vec_id", "subspace", "code")
-    qprobe = ivf_probe_cells(probes, cents, nprobe, id_col, vec_col).select(
-        "query_id", "centroid_id"
-    )
-    lut = _pq_probe_lut(probes, cb, m, dim, id_col, vec_col, arrays=cba)
+    cents = ivf_seed_centroids(vectors, k_cells)
+    cell = ivf_assign(vectors, cents).select("vec_id", "centroid_id")
+    cb = pq_codebook(vectors, m=m, k=k_centroids)
+    cba = _collect_codebook(cb, m, _pq_split(64, m))
+    codes = pq_assign(vectors, cb, m=m, arrays=cba).select("vec_id", "subspace", "code")
+    qprobe = ivf_probe_cells(probes, cents, nprobe).select("query_id", "centroid_id")
+    lut = _pq_probe_lut(probes, cb, m, 64, "vec_id", "embedding", arrays=cba)
     cand = (
         cell.join(F.broadcast(qprobe), "centroid_id")
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -1169,10 +1065,6 @@ def ivf_pq_residual_search(
     k_cells: int = 16,
     m: int = 8,
     k_centroids: int = 16,
-    dim: int = 64,
-    top_k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-PQ with RESIDUAL encoding — the index layout FAISS's IndexIVFPQ
     actually ships: PQ codes quantize each vector's residual v - c(cell)
@@ -1197,8 +1089,8 @@ def ivf_pq_residual_search(
     """
     if k_cells >= 1024:
         raise ValueError("k_cells must stay < 1024 for the packed LUT key")
-    cents = ivf_seed_centroids(vectors, k_cells, id_col, vec_col)
-    cell = ivf_assign(vectors, cents, id_col, vec_col).select("vec_id", "centroid_id")
+    cents = ivf_seed_centroids(vectors, k_cells)
+    cell = ivf_assign(vectors, cents).select("vec_id", "centroid_id")
     cvecs = F.broadcast(
         cents.select(
             "centroid_id",
@@ -1206,7 +1098,7 @@ def ivf_pq_residual_search(
         )
     )
     rv = (
-        vectors.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
+        vectors.select(F.col("vec_id"), F.col("embedding").alias("v"))
         .join(cell, "vec_id")
         .join(cvecs, "centroid_id")
         .select(
@@ -1217,16 +1109,12 @@ def ivf_pq_residual_search(
             ).alias("rvec"),
         )
     )
-    cb = pq_codebook(rv, m=m, k=k_centroids, dim=dim, id_col="vec_id", vec_col="rvec")
-    cba = _collect_codebook(cb, m, _pq_split(dim, m))
-    codes = pq_assign(
-        rv, cb, m=m, dim=dim, id_col="vec_id", vec_col="rvec", arrays=cba
-    ).select("vec_id", "subspace", "code")
-    qprobe = ivf_probe_cells(probes, cents, nprobe, id_col, vec_col).select(
-        "query_id", "centroid_id"
-    )
+    cb = pq_codebook(rv, m=m, k=k_centroids, vec_col="rvec")
+    cba = _collect_codebook(cb, m, _pq_split(64, m))
+    codes = pq_assign(rv, cb, m=m, vec_col="rvec", arrays=cba).select("vec_id", "subspace", "code")
+    qprobe = ivf_probe_cells(probes, cents, nprobe).select("query_id", "centroid_id")
     qres = (
-        probes.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q"))
+        probes.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q"))
         .join(F.broadcast(qprobe), "query_id")
         .join(cvecs, "centroid_id")
         .select(
@@ -1237,7 +1125,7 @@ def ivf_pq_residual_search(
         )
     )
     lut = (
-        _pq_probe_lut(qres, cb, m, dim, "qc", "qrvec", arrays=cba)
+        _pq_probe_lut(qres, cb, m, 64, "qc", "qrvec", arrays=cba)
         .select(
             F.expr("query_id div 1024").alias("query_id"),
             (F.col("query_id") % 1024).alias("centroid_id"),
@@ -1257,7 +1145,7 @@ def ivf_pq_residual_search(
         .groupBy("query_id", "vec_id")
         .agg(F.sum("pd2").alias("adc_dec"))
     )
-    return _adc_rank(scored, top_k)
+    return _adc_rank(scored, 10)
 
 
 def knn_graph(
@@ -1266,9 +1154,6 @@ def knn_graph(
     n_planes: int = 16,
     dim: int = 64,
     prefix_bits: int = 8,
-    max_bucket: int = 100_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate k-nearest-neighbor GRAPH over the whole corpus:
     (vec_id, neighbor_id, cosine4, rank<=k) for every vector.
@@ -1279,18 +1164,18 @@ def knn_graph(
     node are bucket-bounded, so the window sorts tiny per-key groups.
     This is the substrate for graph-based semantic dedup and diversity
     sampling; at 100 TB the bucket prefix widens (more, smaller buckets)
-    and ``max_bucket`` caps any hot region.
+    and the 100,000-row bucket cap bounds any hot region.
     """
-    sig = lsh_signatures(vectors, n_planes, dim, id_col, vec_col)
-    sym = lsh_bucket_pairs(sig, prefix_bits, max_bucket, directed=True).select(
+    sig = lsh_signatures(vectors, n_planes, dim)
+    sym = lsh_bucket_pairs(sig, prefix_bits, directed=True).select(
         "id_a", "id_b"
     )
     # norms once per NODE before the pair joins — cosine() inline would
     # re-fold both norms for every candidate pair (3x the flops)
     v = vectors.select(
-        F.col(id_col).alias("_vid"),
-        F.col(vec_col).alias("_vec"),
-        norm_sq(F.col(vec_col)).alias("_nsq"),
+        F.col("vec_id").alias("_vid"),
+        F.col("embedding").alias("_vec"),
+        norm_sq(F.col("embedding")).alias("_nsq"),
     )
     a = v.withColumnsRenamed({"_vid": "_a_id", "_vec": "_a_vec", "_nsq": "_a_nsq"})
     b = v.withColumnsRenamed({"_vid": "_b_id", "_vec": "_b_vec", "_nsq": "_b_nsq"})
@@ -1323,15 +1208,9 @@ def knn_graph(
     )
 
 
-def random_projection(
-    vectors: DataFrame,
-    out_dim: int = 16,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def random_projection(vectors: DataFrame, dim: int = 64) -> DataFrame:
     """Johnson-Lindenstrauss random projection: dense ``dim``-d embeddings
-    down to ``out_dim`` coordinates (y_j = dot(v, plane_j) / sqrt(out_dim))
+    down to 16 coordinates (y_j = dot(v, plane_j) / sqrt(16))
     using the same md5-derived plane matrix as the LSH signatures.
 
     One packed-matrix transform per row — no shuffle, no Python; the
@@ -1339,43 +1218,33 @@ def random_projection(
     of full-width vectors won't fit the candidate stage. Deterministic
     planes mean two engines (and two runs) agree exactly.
     """
-    planes = hyperplanes(out_dim, dim)
+    planes = hyperplanes(16, dim)
     mat = F.array(*[F.array(*[F.lit(x) for x in plane]) for plane in planes])
-    scale = 1.0 / (out_dim ** 0.5)
-    vec = _checked_dim(F.col(vec_col), dim, "random_projection")
+    scale = 0.25  # 1 / sqrt(16)
+    vec = _checked_dim(F.col("embedding"), dim, "random_projection")
     proj = F.transform(mat, lambda plane: F.round(dot(vec, plane) * scale, 6))
-    return vectors.select(F.col(id_col).alias("vec_id"), proj.alias("projected"))
+    return vectors.select("vec_id", proj.alias("projected"))
 
 
-def lsh_multiprobe_pairs(
-    signatures: DataFrame,
-    prefix_bits: int = 8,
-    probes: int = 2,
-    max_bucket: int = 100_000,
-) -> DataFrame:
+def lsh_multiprobe_pairs(signatures: DataFrame, prefix_bits: int = 8) -> DataFrame:
     """Multi-probe LSH candidates: each vector registers under its own
-    prefix bucket AND the ``probes`` buckets at Hamming distance 1 (lowest
+    prefix bucket AND the 2 buckets at Hamming distance 1 (the two lowest
     bits flipped) — near-misses that landed one bit apart still collide,
     recovering recall that single-bucket LSH loses without adding tables.
 
-    (1 + probes) bucket rows per vector go through
-    :func:`capped_bucket_pairs`, deduped since a pair can meet in several
-    buckets: candidate volume scales by (1 + probes), not by table count.
+    3 bucket rows per vector go through :func:`capped_bucket_pairs`
+    (100,000-row cap), deduped since a pair can meet in several buckets:
+    candidate volume scales by the probe count, not by table count.
     """
     base = F.col("sig").bitwiseAND(F.lit((1 << prefix_bits) - 1))
-    bucket_list = F.array(base, *[base.bitwiseXOR(F.lit(1 << j)) for j in range(probes)])
+    bucket_list = F.array(base, *[base.bitwiseXOR(F.lit(1 << j)) for j in range(2)])
     bucketed = signatures.select("vec_id", F.explode(bucket_list).alias("bucket"))
-    return capped_bucket_pairs(bucketed, ["bucket"], max_bucket, dedupe=True)
+    return capped_bucket_pairs(bucketed, ["bucket"], 100_000, dedupe=True)
 
 
-def lsh_banded_pairs(
-    signatures: DataFrame,
-    bands: int = 4,
-    band_bits: int = 4,
-    max_bucket: int = 100_000,
-) -> DataFrame:
+def lsh_banded_pairs(signatures: DataFrame, band_bits: int = 4) -> DataFrame:
     """OR-amplified LSH candidates: split the b-bit signature into
-    ``bands`` disjoint ``band_bits``-bit keys; a pair is a candidate if
+    4 disjoint ``band_bits``-bit keys; a pair is a candidate if
     it collides in ANY band (same amplification as MinHash banding).
 
     For moderate-similarity targets a single wide prefix is the wrong
@@ -1383,16 +1252,14 @@ def lsh_banded_pairs(
     (measured: 3/59 true cos>=0.4 pairs found by one 8-bit prefix).
     (band, key) is the bucket key, so all bands ride ONE shuffle.
     """
-    melted = band_melt(signatures, F.col("vec_id"), bit_slices(F.col("sig"), bands, band_bits))
-    return capped_bucket_pairs(melted, ["band", "key"], max_bucket, dedupe=True)
+    melted = band_melt(signatures, F.col("vec_id"), bit_slices(F.col("sig"), 4, band_bits))
+    return capped_bucket_pairs(melted, ["band", "key"], 100_000, dedupe=True)
 
 
 def semantic_dedup_cells(
     vectors: DataFrame,
     centroids: DataFrame,
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup-style semantic dedup: prune a vector when a LOWER-id
     vector in the SAME IVF cell has cosine >= ``threshold``.
@@ -1406,7 +1273,7 @@ def semantic_dedup_cells(
     the linear-memory production path (cf. Abbas et al., SemDeDup —
     public method, reimplemented on DataFrame ops from scratch).
     """
-    assign = ivf_assign(vectors, centroids, id_col, vec_col).select(
+    assign = ivf_assign(vectors, centroids).select(
         "vec_id", F.col("centroid_id").alias("cell")
     )
     # ONE persisted per-vector relation carries (id, cell, vec, norm): a
@@ -1423,9 +1290,9 @@ def semantic_dedup_cells(
 
     v = cachereg.track(
         vectors.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("v"),
-            norm_sq(F.col(vec_col)).alias("vsq"),
+            F.col("vec_id"),
+            F.col("embedding").alias("v"),
+            norm_sq(F.col("embedding")).alias("vsq"),
         )
         .join(assign, "vec_id")
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1460,13 +1327,10 @@ def mmr_rerank(
     queries: DataFrame,
     k_cand: int = 12,
     k_sel: int = 4,
-    lam: float = 0.5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Maximal-marginal-relevance diversified top-k: greedily pick
     ``k_sel`` of the ``k_cand`` most-relevant candidates per probe, each
-    step taking argmax of ``lam * rel - (1 - lam) * max_sim_to_selected``
+    step taking argmax of ``0.5 * rel - 0.5 * max_sim_to_selected``
     (Carbonell & Goldstein '98 — the standard de-redundancy re-rank for
     retrieval-augmented training-data selection).
 
@@ -1482,19 +1346,17 @@ def mmr_rerank(
     exchanges for the same semantics; this is the idiomatic Spark shape
     for bounded per-group iterative algorithms.) All similarities round
     to 4 decimals before any comparison so independent engines agree;
-    lam = 0.5 keeps the score arithmetic exact in binary floating point.
+    The weight 0.5 keeps the score arithmetic exact in binary floating point.
 
     Emits (query_id, step, vec_id, score): step 1 score = relevance,
     later steps the MMR objective (rounded to 6).
     """
-    ranked = brute_force_topk(
-        vectors, queries, k=k_cand, id_col=id_col, vec_col=vec_col
-    )
+    ranked = brute_force_topk(vectors, queries, k=k_cand)
     cembs = ranked.join(
         vectors.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("emb"),
-            norm_sq(F.col(vec_col)).alias("nsq"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("emb"),
+            norm_sq(F.col("embedding")).alias("nsq"),
         ),
         "neighbor_id",
     )
@@ -1504,8 +1366,8 @@ def mmr_rerank(
         (-F.col("cosine4")).alias("nr"),
         F.col("neighbor_id").alias("c"),
         F.col("cosine4").alias("rel"),
-        F.col("emb").alias("emb"),
-        F.col("nsq").alias("nsq"),
+        F.col("emb"),
+        F.col("nsq"),
     )
     per_probe = cembs.groupBy("query_id").agg(
         F.array_sort(F.collect_list(cand_struct)).alias("C")
@@ -1529,7 +1391,7 @@ def mmr_rerank(
         )
 
         def merge(acc: F.Column, x: F.Column) -> F.Column:
-            sx = F.round(F.lit(lam) * x["rel"] - F.lit(1 - lam) * x["m"], 6)
+            sx = F.round(F.lit(0.5) * x["rel"] - F.lit(0.5) * x["m"], 6)
             better = (sx > acc["score"]) | (
                 (sx == acc["score"]) & (x["c"] < acc["cand"]["c"])
             )
@@ -1620,10 +1482,7 @@ def ivf_pq_nprobe_curve(
     k_cells: int = 16,
     m: int = 8,
     k_centroids: int = 16,
-    dim: int = 64,
     top_k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-PQ top-k at SEVERAL nprobe operating points from ONE index
     build — how a real deployment sweeps the knob (the index is immutable;
@@ -1642,19 +1501,15 @@ def ivf_pq_nprobe_curve(
     attached.
     """
     pmax = max(nprobes)
-    cents = ivf_seed_centroids(vectors, k_cells, id_col, vec_col)
-    cell = ivf_assign(vectors, cents, id_col, vec_col).select(
-        "vec_id", "centroid_id"
-    )
-    cb = pq_codebook(vectors, m=m, k=k_centroids, dim=dim, id_col=id_col, vec_col=vec_col)
-    cba = _collect_codebook(cb, m, _pq_split(dim, m))
-    codes = pq_assign(
-        vectors, cb, m=m, dim=dim, id_col=id_col, vec_col=vec_col, arrays=cba
-    ).select("vec_id", "subspace", "code")
-    qprobe = ivf_probe_cells(probes, cents, pmax, id_col, vec_col).select(
+    cents = ivf_seed_centroids(vectors, k_cells)
+    cell = ivf_assign(vectors, cents).select("vec_id", "centroid_id")
+    cb = pq_codebook(vectors, m=m, k=k_centroids)
+    cba = _collect_codebook(cb, m, _pq_split(64, m))
+    codes = pq_assign(vectors, cb, m=m, arrays=cba).select("vec_id", "subspace", "code")
+    qprobe = ivf_probe_cells(probes, cents, pmax).select(
         "query_id", "centroid_id", F.col("rank").alias("prank")
     )
-    lut = _pq_probe_lut(probes, cb, m, dim, id_col, vec_col, arrays=cba)
+    lut = _pq_probe_lut(probes, cb, m, 64, "vec_id", "embedding", arrays=cba)
     cand = (
         cell.join(F.broadcast(qprobe), "centroid_id")
         .filter(F.col("vec_id") != F.col("query_id"))

@@ -29,21 +29,21 @@ def _hash60(col: F.Column) -> F.Column:
     return F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10).cast("long")
 
 
-def kmv_distinct_estimate(df: DataFrame, col: str, k: int = 256) -> DataFrame:
+def kmv_distinct_estimate(df: DataFrame, col: str) -> DataFrame:
     """One-row (k_used, kth_hash, estimate) KMV distinct-count sketch.
 
-    ``estimate`` is (k-1) * M / h_k when at least k distinct hashes exist,
+    ``estimate`` is (k-1) * M / h_k with k = 256 when at least k distinct hashes exist,
     else the exact distinct count (small-cardinality regime).
     """
     hashes = df.select(_hash60(F.col(col)).alias("h")).distinct()
-    smallest = hashes.orderBy("h").limit(k)
+    smallest = hashes.orderBy("h").limit(256)
     return smallest.agg(
         F.count("*").alias("k_used"),
         F.max("h").alias("kth_hash"),
         F.when(
-            F.count("*") < k, F.count("*").cast("double")
+            F.count("*") < 256, F.count("*").cast("double")
         )
-        .otherwise((F.lit(float(k - 1)) * F.lit(KMV_M)) / F.max("h"))
+        .otherwise((F.lit(255.0) * F.lit(KMV_M)) / F.max("h"))
         .alias("estimate"),
     )
 
@@ -59,18 +59,16 @@ def heavy_hitters(df: DataFrame, col: str, top_n: int = 10) -> DataFrame:
     )
 
 
-def count_min_sketch(
-    df: DataFrame, col: str, depth: int = 4, width: int = 256
-) -> DataFrame:
+def count_min_sketch(df: DataFrame, col: str, width: int = 256) -> DataFrame:
     """(row, col, n): a count-min sketch of the value stream — the
     fixed-size frequency summary that answers "roughly how often does X
-    occur" over arbitrarily large streams with depth*width counters.
+    occur" over arbitrarily large streams with 4*width counters.
 
     Hash family: h_j = (h1 + j*h2) mod width from one md5 per value (the
     same Kirsch-Mitzenmacher two-hash construction as the MinHash family,
     so an independent engine rebuilds identical counters). Build = one
-    explode to depth narrow rows + one groupBy on (row, col) with map-side
-    partials; the sketch is depth*width rows regardless of stream size.
+    explode to 4 narrow rows + one groupBy on (row, col) with map-side
+    partials; the sketch is 4*width rows regardless of stream size.
     """
     h1 = F.conv(F.substring(F.md5(F.col(col).cast("string")), 1, 15), 16, 10).cast("long")
     h2 = F.conv(F.substring(F.md5(F.col(col).cast("string")), 16, 15), 16, 10).cast("long")
@@ -80,7 +78,7 @@ def count_min_sketch(
                 F.lit(j).alias("row"),
                 ((h1 + F.lit(j) * h2) % F.lit(width)).cast("long").alias("col"),
             )
-            for j in range(depth)
+            for j in range(4)
         ]
     )
     return (
@@ -91,25 +89,22 @@ def count_min_sketch(
     )
 
 
-def cms_estimate(
-    sketch: DataFrame, probes: DataFrame, probe_col: str = "value",
-    depth: int = 4, width: int = 256,
-) -> DataFrame:
+def cms_estimate(sketch: DataFrame, probes: DataFrame, width: int = 256) -> DataFrame:
     """(value, est): point-frequency estimates — min over the sketch rows
-    of each probe's counter. The sketch (depth*width rows) broadcasts;
+    of each probe's ``value`` counter. The sketch (4*width rows) broadcasts;
     estimates never over-count below the classic eps*N bound."""
-    h1 = F.conv(F.substring(F.md5(F.col(probe_col).cast("string")), 1, 15), 16, 10).cast("long")
-    h2 = F.conv(F.substring(F.md5(F.col(probe_col).cast("string")), 16, 15), 16, 10).cast("long")
+    h1 = F.conv(F.substring(F.md5(F.col("value").cast("string")), 1, 15), 16, 10).cast("long")
+    h2 = F.conv(F.substring(F.md5(F.col("value").cast("string")), 16, 15), 16, 10).cast("long")
     cells = F.array(
         *[
             F.struct(
                 F.lit(j).alias("row"),
                 ((h1 + F.lit(j) * h2) % F.lit(width)).cast("long").alias("col"),
             )
-            for j in range(depth)
+            for j in range(4)
         ]
     )
-    melted = probes.select(F.col(probe_col).alias("value"), F.explode(cells).alias("c")).select(
+    melted = probes.select(F.col("value"), F.explode(cells).alias("c")).select(
         "value", F.col("c.row").alias("row"), F.col("c.col").alias("col")
     )
     return (
@@ -119,9 +114,7 @@ def cms_estimate(
     )
 
 
-def kmv_distinct_per_group(
-    df: DataFrame, group_cols: list[str], col: str, k: int = 64
-) -> DataFrame:
+def kmv_distinct_per_group(df: DataFrame, group_cols: list[str], col: str) -> DataFrame:
     """Per-group KMV distinct-count sketch: (group..., k_used, kth_hash,
     estimate).
 
@@ -130,17 +123,17 @@ def kmv_distinct_per_group(
     are numerous and wide (distinct users per day over a 100 TB event
     log). The dedup groupBy is map-side combinable; the per-group sort
     then touches only already-distinct (group, hash) rows, and every
-    group ships exactly k longs to the estimate. Deterministic (md5-
+    group ships at most 64 longs to the estimate. Deterministic (md5-
     derived hashes), so two engines agree on the ESTIMATE itself.
     """
     hashes = df.select(*group_cols, _hash60(F.col(col)).alias("h")).distinct()
     w = Window.partitionBy(*group_cols).orderBy("h")
-    smallest = hashes.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
+    smallest = hashes.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 64)
     return smallest.groupBy(*group_cols).agg(
         F.count("*").alias("k_used"),
         F.max("h").alias("kth_hash"),
-        F.when(F.count("*") < k, F.count("*").cast("double"))
-        .otherwise((F.lit(float(k - 1)) * F.lit(KMV_M)) / F.max("h"))
+        F.when(F.count("*") < 64, F.count("*").cast("double"))
+        .otherwise((F.lit(63.0) * F.lit(KMV_M)) / F.max("h"))
         .alias("estimate"),
     )
 
@@ -150,7 +143,6 @@ def binned_quantiles(
     group_cols: list[str],
     value_col: str,
     quantiles: tuple[float, ...] = (0.5, 0.95, 0.99),
-    bin_width: float = 0.01,
 ) -> DataFrame:
     """Mergeable per-group quantile estimates from fixed-width value bins
     — the deterministic scale substitute for exact per-group percentile
@@ -158,12 +150,12 @@ def binned_quantiles(
 
     One map-side-combinable groupBy (group, bin) -> counts; the
     cumulative walk runs per group over its OWN bin list (bounded by the
-    value range / bin_width, not by row count). The estimate for quantile
+    value range / 0.01, not by row count). The estimate for quantile
     q is the upper edge of the first bin whose running count reaches
     ceil(q * n) — a value guaranteed within one bin width of the true
     quantile. Rows per group shipped: |bins|, regardless of corpus size.
     """
-    bin_col = F.floor(F.col(value_col) / F.lit(bin_width)).cast("long")
+    bin_col = F.floor(F.col(value_col) / F.lit(0.01)).cast("long")
     counts = (
         df.select(*group_cols, bin_col.alias("bin"))
         .groupBy(*group_cols, "bin")
@@ -179,22 +171,20 @@ def binned_quantiles(
         target = F.ceil(F.lit(q) * F.col("total"))
         qualifying = F.when(F.col("cum") >= target, F.col("bin"))
         aggs.append(
-            F.round((F.min(qualifying) + 1) * F.lit(bin_width), 6).alias(name)
+            F.round((F.min(qualifying) + 1) * F.lit(0.01), 6).alias(name)
         )
     return cum.groupBy(*group_cols).agg(
         F.max("total").cast("long").alias("n"), *aggs
     )
 
 
-def hll_distinct_per_group(
-    df: DataFrame, group_cols: list[str], col: str, p: int = 8
-) -> DataFrame:
+def hll_distinct_per_group(df: DataFrame, group_cols: list[str], col: str) -> DataFrame:
     """Per-group HyperLogLog distinct-count sketch: (group..., m,
     zero_regs, estimate).
 
     The register-array sibling of :func:`kmv_distinct_per_group`
-    (Flajolet et al. 2007): split the 60-bit md5 hash into a p-bit
-    register index and a (60-p)-bit suffix; each register keeps the max
+    (Flajolet et al. 2007): split the 60-bit md5 hash into an 8-bit
+    register index and a 52-bit suffix; each register keeps the max
     rho = leading-zero-count(suffix) + 1; estimate = alpha_m * m^2 /
     sum_j 2^(-M_j), with the standard small-range correction
     m * ln(m / V) when V registers are untouched. Reference parity:
@@ -211,31 +201,29 @@ def hll_distinct_per_group(
     a 1-ulp divergence cannot surface.
 
     At 100 TB: the (group, register) groupBy is map-side combinable —
-    each task ships at most m=2^p rows per group regardless of row
+    each task ships at most m=256 rows per group regardless of row
     count, and the register array never materializes wider than m rows.
     Registers merge by MAX, so per-partition partials combine exactly
     (the property KMV's top-k also has, but HLL keeps fixed m-row state
     per group instead of k sorted hashes).
     """
-    regs = hll_registers(df, group_cols, col, p)
-    return hll_estimate_from_registers(regs, group_cols, p)
+    regs = hll_registers(df, group_cols, col)
+    return hll_estimate_from_registers(regs, group_cols)
 
 
-def hll_registers(
-    df: DataFrame, group_cols: list[str], col: str, p: int = 8
-) -> DataFrame:
+def hll_registers(df: DataFrame, group_cols: list[str], col: str) -> DataFrame:
     """(group..., reg, mrho): the raw per-group HLL register rows — the
     MERGEABLE form. Registers combine by MAX, so coarser groups (weekly
-    from daily, global from per-shard) re-aggregate these <= 2^p rows
+    from daily, global from per-shard) re-aggregate these <= 256 rows
     per group WITHOUT rescanning data; :func:`hll_estimate_from_registers`
     turns any (re-)aggregated register set back into an estimate that
     still hash-matches an engine computing the coarse sketch directly
     (MAX associativity)."""
-    m = 1 << p
-    suffix_bits = 60 - p
+    m = 256
+    suffix_bits = 52
     h = _hash60(F.col(col))
     idx = h.bitwiseAND(F.lit(m - 1))
-    rest = F.shiftright(h, p)
+    rest = F.shiftright(h, 8)
     rho = (
         F.when(rest == 0, F.lit(suffix_bits + 1))
         .otherwise(F.lit(suffix_bits + 1) - F.length(F.bin(rest)))
@@ -248,14 +236,12 @@ def hll_registers(
     )
 
 
-def hll_estimate_from_registers(
-    regs: DataFrame, group_cols: list[str], p: int = 8
-) -> DataFrame:
+def hll_estimate_from_registers(regs: DataFrame, group_cols: list[str]) -> DataFrame:
     """(group..., m, zero_regs, estimate) from register rows (see
     :func:`hll_registers`): exact DECIMAL harmonic numerator, one IEEE
     division, small-range ln correction, ROUND 2 — the estimator half of
     hll_distinct_per_group, reusable after any register re-aggregation."""
-    m = 1 << p
+    m = 256
     two61 = 1 << 61
     alpha = 0.7213 / (1.0 + 1.079 / m)  # large-m bias constant
     per_group = regs.groupBy(*group_cols).agg(
@@ -283,12 +269,10 @@ def hll_estimate_from_registers(
     )
 
 
-def kmv_overlap_estimate(
-    df_a: DataFrame, col_a: str, df_b: DataFrame, col_b: str, k: int = 256
-) -> DataFrame:
+def kmv_overlap_estimate(df_a: DataFrame, col_a: str, df_b: DataFrame, col_b: str) -> DataFrame:
     """One-row estimate of |A ∩ B| distinct keys from two KMV sketches —
     the sketch-algebra answer to "how big is this join's key overlap"
-    WITHOUT scanning either side twice (Beyer et al. 2007): the k
+    WITHOUT scanning either side twice (Beyer et al. 2007): the k = 256
     smallest hashes of A ∪ B are exactly the k smallest of (K_a ∪ K_b),
     so the union sketch derives from the two k-row sketches alone;
     Jaccard ≈ |K_union ∩ K_a ∩ K_b| / k; |A ∩ B| ≈ J * |A ∪ B|.
@@ -304,12 +288,12 @@ def kmv_overlap_estimate(
     retained (which HLL cannot answer).
     """
     ha = (
-        df_a.select(_hash60(F.col(col_a)).alias("h")).distinct().orderBy("h").limit(k)
+        df_a.select(_hash60(F.col(col_a)).alias("h")).distinct().orderBy("h").limit(256)
     )
     hb = (
-        df_b.select(_hash60(F.col(col_b)).alias("h")).distinct().orderBy("h").limit(k)
+        df_b.select(_hash60(F.col(col_b)).alias("h")).distinct().orderBy("h").limit(256)
     )
-    union_k = ha.unionAll(hb).distinct().orderBy("h").limit(k)
+    union_k = ha.unionAll(hb).distinct().orderBy("h").limit(256)
     both = ha.intersect(hb)  # hashes in K_a ∩ K_b
     shared = union_k.join(both, "h", "left_semi")
     stats = union_k.agg(
@@ -317,8 +301,8 @@ def kmv_overlap_estimate(
     ).crossJoin(shared.agg(F.count("*").alias("n_shared")))
     jacc = F.col("n_shared") / F.col("k_used")
     union_est = F.when(
-        F.col("k_used") < k, F.col("k_used").cast("double")
-    ).otherwise((F.lit(float(k - 1)) * F.lit(KMV_M)) / F.col("hk"))
+        F.col("k_used") < 256, F.col("k_used").cast("double")
+    ).otherwise((F.lit(255.0) * F.lit(KMV_M)) / F.col("hk"))
     return stats.select(
         "k_used",
         "n_shared",

@@ -26,22 +26,18 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def km_hazard_table(
-    subjects: DataFrame,
-    duration_col: str = "t_obs",
-    event_col: str = "converted",
-) -> DataFrame:
+def km_hazard_table(subjects: DataFrame) -> DataFrame:
     """(t, n_risk, n_events, hazard) for every duration with >= 1 event.
 
-    ``subjects`` holds one row per subject: ``duration_col`` (integer
+    ``subjects`` holds one row per subject: ``t_obs`` (integer
     duration, e.g. days until the event or until censoring) and
-    ``event_col`` (true = the event happened at that duration, false =
+    ``converted`` (true = the event happened at that duration, false =
     censored there). Standard at-risk convention: a subject censored AT
     duration t still counts in n_risk(t).
     """
-    per_t = subjects.groupBy(F.col(duration_col).alias("t")).agg(
+    per_t = subjects.groupBy(F.col("t_obs").alias("t")).agg(
         F.count(F.lit(1)).alias("n_all"),
-        F.sum(F.col(event_col).cast("long")).alias("n_events"),
+        F.sum(F.col("converted").cast("long")).alias("n_events"),
     )
     w = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
     w_all = Window.orderBy("t").rowsBetween(

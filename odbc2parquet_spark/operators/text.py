@@ -32,9 +32,9 @@ def words(text: Column) -> Column:
     return F.filter(F.split(text, " "), lambda w: w != "")
 
 
-def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_stats(docs: DataFrame) -> DataFrame:
     """Whitespace tokens, regex (BPE-ish) tokens, char count per doc."""
-    t = F.col(text_col)
+    t = F.col("text")
     return docs.select(
         "doc_id",
         F.size(words(t)).cast("long").alias("n_ws_tokens"),
@@ -43,7 +43,7 @@ def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def dedup_normal_form(text_col: str = "text") -> Column:
+def dedup_normal_form() -> Column:
     """The canonical text form exact/near dedup hashes on (the C4 /
     Lee-et-al convention): lowercase, every non-alphanumeric run collapsed
     to a single space, ends trimmed. Case and punctuation variants of the
@@ -55,27 +55,27 @@ def dedup_normal_form(text_col: str = "text") -> Column:
     ``lower`` for an ICU case fold upstream; the DuckDB oracle matches on
     ASCII, which is what the gate certifies.
     """
-    return F.trim(F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9]+", " "))
+    return F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", " "))
 
 
-def normalize_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def normalize_stats(docs: DataFrame) -> DataFrame:
     """Per-doc normalization report: raw vs canonical length + the
     canonical-form hash (the key exact dedup would group on)."""
-    norm = dedup_normal_form(text_col)
+    norm = dedup_normal_form()
     return docs.select(
         "doc_id",
-        F.length(F.col(text_col)).cast("long").alias("n_chars"),
+        F.length(F.col("text")).cast("long").alias("n_chars"),
         F.length(norm).cast("long").alias("n_norm_chars"),
         F.md5(norm).alias("norm_hash"),
     )
 
 
-def _quality_parts(text_col: str) -> dict[str, Column]:
+def _quality_parts() -> dict[str, Column]:
     """The quality-signal component expressions — ONE definition shared by
     :func:`quality_score_col` (the gate) and :func:`quality_scores` (the
     report), so the published per-doc signals always explain the score
     that gated the doc."""
-    t = F.col(text_col)
+    t = F.col("text")
     ws = words(t)
     n_words = F.size(ws)
     n_chars = F.length(t)
@@ -101,7 +101,7 @@ def _quality_parts(text_col: str) -> dict[str, Column]:
     }
 
 
-def quality_score_col(text_col: str = "text") -> Column:
+def quality_score_col() -> Column:
     """The composite quality score as a pure Column expression.
 
     Exposed separately from :func:`quality_scores` so pipeline stages can
@@ -109,10 +109,10 @@ def quality_score_col(text_col: str = "text") -> Column:
     scan computes the score in place (`withColumn`), which matters when
     the gate is the first stage of a long composed plan.
     """
-    return _quality_parts(text_col)["quality_score"]
+    return _quality_parts()["quality_score"]
 
 
-def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_scores(docs: DataFrame) -> DataFrame:
     """Heuristic quality signals: length, alpha ratio, stopword ratio,
     mean word length, and a composite score.
 
@@ -120,7 +120,7 @@ def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     drop too-short docs, low-stopword docs, symbol-heavy docs) as one
     deterministic expression.
     """
-    p = _quality_parts(text_col)
+    p = _quality_parts()
     n_words = p["n_words"]
     n_chars = p["n_chars"]
     alpha_ratio = p["alpha_ratio"]
@@ -138,14 +138,14 @@ def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """Stopword-marker language ID with deterministic argmax.
 
     Scores each language by marker-word hits; ties break by language code
     (so engines agree even on all-zero scores). 'und' (undetermined) when
     no marker hits at all.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     ws = words(t)
     # array_contains(markers, w) rather than w.isin(...): lambda variables
     # inside higher-order functions don't support the isin predicate. The
@@ -175,14 +175,14 @@ def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select(*sel)
 
 
-def fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprints(docs: DataFrame) -> DataFrame:
     """Polynomial rolling fingerprint over the word sequence.
 
     acc = (acc * 31 + (md5_24bit(word))) mod 1_000_000_007 — order-sensitive
     (a permuted document fingerprints differently), overflow-free in int64,
     reproducible in any engine with md5. Left fold via F.aggregate.
     """
-    ws = words(F.col(text_col))
+    ws = words(F.col("text"))
     word_h = lambda w: F.conv(F.substring(F.md5(w), 1, 6), 16, 10).cast("long")  # noqa: E731
     fp = F.aggregate(
         ws,
@@ -192,7 +192,7 @@ def fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select("doc_id", fp.alias("fingerprint"), F.size(ws).cast("long").alias("n_words"))
 
 
-def bigram_surprisal(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def bigram_surprisal(docs: DataFrame) -> DataFrame:
     """(doc_id, n_bigrams, avg_surprisal): corpus-statistics language-model
     score — the KenLM-style quality signal without an external model.
 
@@ -203,7 +203,7 @@ def bigram_surprisal(docs: DataFrame, text_col: str = "text") -> DataFrame:
     fluent repeated text scores low. Deterministic: counts are integers,
     the log ratio is fixed-order arithmetic, result rounded to 6 decimals.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     ws = words(t)
     bigram_expr = (
         "CASE WHEN size(ws) < 2 THEN array() ELSE "
@@ -236,7 +236,7 @@ def _ngram_array_expr(n: int) -> str:
     )
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Within-document repetition signals (Gopher-style repetition filters).
 
     (doc_id, n_bigrams, distinct_bigram_ratio, top_word_ratio): the
@@ -245,7 +245,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     per-row higher-order-function arithmetic — narrow, zero shuffles, the
     cheapest quality gate to run first at 100 TB.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     prepared = docs.select("doc_id", words(t).alias("ws"))
     bigrams = F.expr(_ngram_array_expr(2))
     n_bigrams = F.size(bigrams)
@@ -281,9 +281,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def boilerplate_ngrams(
-    docs: DataFrame, n: int = 5, min_docs: int = 10, text_col: str = "text"
-) -> DataFrame:
+def boilerplate_ngrams(docs: DataFrame, n: int = 5, min_docs: int = 10) -> DataFrame:
     """Corpus-level boilerplate: n-grams appearing in >= min_docs documents
     (the C4 'repeated line' filter generalized to n-grams, since this
     corpus has no line structure).
@@ -293,7 +291,7 @@ def boilerplate_ngrams(
     At 100 TB the output (grams above the threshold) is tiny and becomes a
     broadcast blocklist for the cleaning pass.
     """
-    prepared = docs.select(F.col("doc_id"), words(F.col(text_col)).alias("ws"))
+    prepared = docs.select(F.col("doc_id"), words(F.col("text")).alias("ws"))
     grams = prepared.select(
         "doc_id", F.explode(F.array_distinct(F.expr(_ngram_array_expr(n)))).alias("g")
     )
@@ -304,13 +302,7 @@ def boilerplate_ngrams(
     )
 
 
-def contamination(
-    docs: DataFrame,
-    probes: DataFrame,
-    n: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def contamination(docs: DataFrame, probes: DataFrame, n: int = 5) -> DataFrame:
     """Benchmark-contamination check: per-document overlap with a probe
     set's n-grams (the eval-leakage scan every training corpus needs).
 
@@ -321,18 +313,18 @@ def contamination(
     corpus, one groupBy back to doc granularity.
     """
     probe_grams = F.broadcast(
-        probes.select(words(F.col(text_col)).alias("ws"))
+        probes.select(words(F.col("text")).alias("ws"))
         .select(F.explode(F.expr(_ngram_array_expr(n))).alias("g"))
         .distinct()
         .withColumn("hit", F.lit(1))
     )
-    probe_ids = F.broadcast(probes.select(F.col(id_col)))
-    corpus = docs.join(probe_ids, id_col, "left_anti")
+    probe_ids = F.broadcast(probes.select(F.col("doc_id")))
+    corpus = docs.join(probe_ids, "doc_id", "left_anti")
     grams = corpus.select(
-        F.col(id_col), words(F.col(text_col)).alias("ws")
-    ).select(id_col, F.explode(F.array_distinct(F.expr(_ngram_array_expr(n)))).alias("g"))
+        F.col("doc_id"), words(F.col("text")).alias("ws")
+    ).select("doc_id", F.explode(F.array_distinct(F.expr(_ngram_array_expr(n)))).alias("g"))
     joined = grams.join(probe_grams, "g", "left_outer")
-    return joined.groupBy(id_col).agg(
+    return joined.groupBy("doc_id").agg(
         F.count("*").alias("n_grams"),
         F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_contaminated"),
         F.round(
@@ -341,13 +333,13 @@ def contamination(
     )
 
 
-def domain_mix(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def domain_mix(docs: DataFrame) -> DataFrame:
     """Per-source mixture report: (source, n_docs, total_tokens,
     token_share) — the mixture table a training run is configured from.
 
     One groupBy plus a 1-row broadcast for the share denominator.
     """
-    per = docs.select(F.col("source"), F.size(words(F.col(text_col))).alias("n"))
+    per = docs.select(F.col("source"), F.size(words(F.col("text"))).alias("n"))
     agg = per.groupBy("source").agg(
         F.count("*").alias("n_docs"), F.sum("n").cast("long").alias("total_tokens")
     )
@@ -363,13 +355,7 @@ def domain_mix(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def chunk_documents(
-    docs: DataFrame,
-    chunk_tokens: int = 32,
-    overlap: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def chunk_documents(docs: DataFrame, chunk_tokens: int = 32, overlap: int = 8) -> DataFrame:
     """Split documents into overlapping token windows — the
     context-length-bounded chunking step that feeds tokenization/packing
     in a training pipeline.
@@ -383,17 +369,17 @@ def chunk_documents(
     step = chunk_tokens - overlap
     if step <= 0:
         raise ValueError("overlap must be smaller than chunk_tokens")
-    t = F.col(text_col)
-    prepared = docs.select(F.col(id_col), words(t).alias("ws"))
+    t = F.col("text")
+    prepared = docs.select(F.col("doc_id"), words(t).alias("ws"))
     starts = F.when(
         F.size("ws") > 0, F.sequence(F.lit(1), F.size("ws"), F.lit(step))
     ).otherwise(F.array().cast("array<int>"))
     chunks = F.transform(starts, lambda s: F.slice(F.col("ws"), s, chunk_tokens))
     exploded = prepared.select(
-        id_col, F.posexplode(chunks).alias("chunk_id", "chunk")
+        "doc_id", F.posexplode(chunks).alias("chunk_id", "chunk")
     )
     return exploded.select(
-        id_col,
+        "doc_id",
         F.col("chunk_id").cast("long").alias("chunk_id"),
         F.size("chunk").cast("long").alias("n_tokens"),
         F.md5(F.concat_ws(" ", F.col("chunk"))).alias("chunk_hash"),
@@ -413,9 +399,7 @@ PII_PATTERNS: dict[str, str] = {
 }
 
 
-def pii_scan(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def pii_scan(docs: DataFrame) -> DataFrame:
     """Detect-and-redact pass for the standard pre-training scrub
     (emails, phone numbers, SSN-shaped ids, IPv4 addresses).
 
@@ -427,7 +411,7 @@ def pii_scan(
     content. Mirrors the curation stage of public pipeline recipes
     (C4/RefinedWeb-style regex scrubbing).
     """
-    t = F.col(text_col)
+    t = F.col("text")
     counts = [
         F.regexp_count(t, F.lit(pat)).cast("long").alias(f"n_{kind}")
         for kind, pat in PII_PATTERNS.items()
@@ -435,25 +419,20 @@ def pii_scan(
     red = t
     for kind, pat in PII_PATTERNS.items():
         red = F.regexp_replace(red, pat, f"[{kind.upper()}]")
-    scanned = docs.select(F.col(id_col), *counts, red.alias("redacted"))
+    scanned = docs.select(F.col("doc_id"), *counts, red.alias("redacted"))
     # total = sum of the projected columns — NOT a second set of regex
     # scans (each regexp_count re-reads the full text)
     total = sum(F.col(f"n_{kind}") for kind in PII_PATTERNS)
     return scanned.select(
-        id_col,
+        "doc_id",
         *[f"n_{kind}" for kind in PII_PATTERNS],
         total.alias("n_pii_total"),
         "redacted",
     )
 
 
-def tokenize_with_vocab(
-    docs: DataFrame,
-    vocab_size: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Corpus-driven tokenizer: build the top-``vocab_size`` word vocab
+def tokenize_with_vocab(docs: DataFrame) -> DataFrame:
+    """Corpus-driven tokenizer: build the top-16 word vocab
     (rank by frequency, ties alphabetical; ids are the rank) and encode
     every document as its id sequence (-1 for out-of-vocab).
 
@@ -468,27 +447,27 @@ def tokenize_with_vocab(
     per-doc regroup where sort_array on (pos, id) structs restores
     sequence order inside the aggregation buffer (no per-doc window).
     """
-    t = F.col(text_col)
+    t = F.col("text")
     tokens = docs.select(
-        F.col(id_col), F.posexplode(words(t)).alias("pos", "w")
+        F.col("doc_id"), F.posexplode(words(t)).alias("pos", "w")
     )
     counts = tokens.groupBy("w").agg(F.count("*").alias("c"))
     # top-k via orderBy+limit = TakeOrderedAndProject (per-partition heap,
     # k rows to the driver-side reduce) — NOT a global window, which would
     # funnel the entire distinct-word table into one task; the rank window
-    # then runs over only the vocab_size surviving rows
-    top = counts.orderBy(F.desc("c"), F.asc("w")).limit(vocab_size)
+    # then runs over only the 16 surviving rows
+    top = counts.orderBy(F.desc("c"), F.asc("w")).limit(16)
     w_rank = Window.orderBy(F.desc("c"), F.asc("w"))
     vocab = top.withColumn("tok_id", F.row_number().over(w_rank) - 1).select(
         "w", "tok_id"
     )
     tok = tokens.join(F.broadcast(vocab), "w", "left_outer").select(
-        id_col, "pos", F.coalesce(F.col("tok_id"), F.lit(-1)).alias("tid")
+        "doc_id", "pos", F.coalesce(F.col("tok_id"), F.lit(-1)).alias("tid")
     )
     seq = F.transform(
         F.array_sort(F.collect_list(F.struct("pos", "tid"))), lambda s: s["tid"]
     )
-    return tok.groupBy(id_col).agg(
+    return tok.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_tokens"),
         F.sum((F.col("tid") == -1).cast("int")).cast("long").alias("n_oov"),
         F.md5(F.concat_ws(",", F.transform(seq, lambda x: x.cast("string")))).alias(
@@ -497,9 +476,7 @@ def tokenize_with_vocab(
     )
 
 
-def cap_per_source(
-    docs: DataFrame, cap: int, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def cap_per_source(docs: DataFrame, cap: int) -> DataFrame:
     """Per-domain frequency capping (the RefinedWeb/C4 "no single host
     dominates the corpus" rule): rank every document within its source by
     quality (ties broken by id) and mark the top ``cap`` as kept.
@@ -515,9 +492,9 @@ def cap_per_source(
     The exact window stays the semantic contract either way.
     """
     scored = docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         F.col("source"),
-        quality_score_col(text_col).alias("quality_score"),
+        quality_score_col().alias("quality_score"),
     )
     w = Window.partitionBy("source").orderBy(
         F.desc("quality_score"), F.asc("doc_id")
@@ -527,9 +504,7 @@ def cap_per_source(
     )
 
 
-def bpe_pair_counts(
-    docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def bpe_pair_counts(docs: DataFrame) -> DataFrame:
     """Adjacent-symbol pair frequencies — the statistic BPE tokenizer
     learning maximizes each merge round (Sennrich et al. '16).
 
@@ -541,7 +516,7 @@ def bpe_pair_counts(
     word frequency.
     """
     words_df = docs.select(
-        F.explode(words(F.col(text_col))).alias("word")
+        F.explode(words(F.col("text"))).alias("word")
     ).groupBy("word").agg(F.count("*").alias("wc"))
     sym = words_df.withColumn(
         "s", F.filter(F.split(F.col("word"), ""), lambda x: x != "")
@@ -575,9 +550,7 @@ def bpe_apply_merge(symbols: F.Column, a: str, b: str) -> F.Column:
     )
 
 
-def bpe_learn(
-    docs: DataFrame, n_merges: int = 5, text_col: str = "text"
-) -> list[tuple[str, str]]:
+def bpe_learn(docs: DataFrame, n_merges: int = 5) -> list[tuple[str, str]]:
     """Learn ``n_merges`` BPE merges: each round counts adjacent pairs on
     the CURRENT symbolization of the distinct-word table and merges the
     most frequent pair (ties: lexicographic (a, b)).
@@ -587,7 +560,7 @@ def bpe_learn(
     argmax uses a TakeOrdered limit(1), not a global window.
     """
     words_df = docs.select(
-        F.explode(words(F.col(text_col))).alias("word")
+        F.explode(words(F.col("text"))).alias("word")
     ).groupBy("word").agg(F.count("*").alias("wc"))
     sym = words_df.withColumn(
         "s", F.filter(F.split(F.col("word"), ""), lambda x: x != "")
@@ -780,7 +753,6 @@ def bpe_learn_batched(
     docs: DataFrame,
     n_merges: int = 50,
     batch: int = 10,
-    text_col: str = "text",
     local_vocab_cutover: int = 200_000,
 ) -> list[tuple[str, str]]:
     """Learn BPE merges at PRODUCTION shape: up to ``batch`` merges per
@@ -821,7 +793,7 @@ def bpe_learn_batched(
     import pandas as pd
 
     words_df = docs.select(
-        F.explode(words(F.col(text_col))).alias("word")
+        F.explode(words(F.col("text"))).alias("word")
     ).groupBy("word").agg(F.count("*").alias("wc"))
 
     # Cutover decision on the word table itself (1:1 with the symbol
@@ -921,9 +893,7 @@ def bpe_learn_batched(
     return merges
 
 
-def hash_embed_vectors(
-    docs: DataFrame, dim: int = 16, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def hash_embed_vectors(docs: DataFrame, dim: int = 16) -> DataFrame:
     """Feature-hashed document vectors: (doc_id, nnz, vec array<double>).
 
     Each token adds +/-1 to an md5-chosen bucket; the vector is
@@ -933,7 +903,7 @@ def hash_embed_vectors(
     """
     h1 = F.conv(F.substring(F.md5(F.col("w")), 1, 15), 16, 10).cast("long")
     toks = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(words(F.col(text_col))).alias("w")
+        F.col("doc_id"), F.explode(words(F.col("text"))).alias("w")
     ).select(
         "doc_id",
         (h1 % dim).alias("bucket"),
@@ -960,7 +930,7 @@ def hash_embed_vectors(
         F.sequence(F.lit(0), F.lit(dim - 1)), lambda b: F.lit(0.0)
     )
     return (
-        docs.select(F.col(id_col).alias("doc_id"))
+        docs.select(F.col("doc_id"))
         .join(per_doc, "doc_id", "left")
         .select(
             "doc_id",
@@ -973,9 +943,7 @@ def hash_embed_vectors(
     )
 
 
-def hash_embed(
-    docs: DataFrame, dim: int = 16, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def hash_embed(docs: DataFrame, dim: int = 16) -> DataFrame:
     """Feature-hashed document embeddings (the hashing trick): each token
     adds +/-1 to md5-chosen bucket of a ``dim``-wide vector; the result is
     L2-normalized. No vocabulary, no model — the deterministic text ->
@@ -995,7 +963,7 @@ def hash_embed(
     is a map_from_entries + dense transform inside the per-doc aggregate,
     never a pivot. Signs/buckets are md5-derived, engine-reproducible.
     """
-    v = hash_embed_vectors(docs, dim, text_col, id_col)
+    v = hash_embed_vectors(docs, dim)
     return v.select(
         "doc_id",
         "nnz",
@@ -1010,9 +978,7 @@ def hash_embed(
     )
 
 
-def bpe_vocab_token_counts(
-    docs: DataFrame, merges: list[tuple[str, str]], text_col: str = "text"
-) -> DataFrame:
+def bpe_vocab_token_counts(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Tokenizer APPLICATION: (distinct word, token count) under a learned
     BPE merge list — the encode half that pairs with :func:`bpe_learn_batched`
     (learning). The merge list ships to executors in the closure (a merge
@@ -1029,7 +995,7 @@ def bpe_vocab_token_counts(
     import pandas as pd
 
     words_df = docs.select(
-        F.explode(words(F.col(text_col))).alias("word")
+        F.explode(words(F.col("text"))).alias("word")
     ).distinct()
     mlist = [(a, b) for a, b in merges]
 
@@ -1054,8 +1020,8 @@ def bpe_vocab_token_counts(
     return words_df.mapInPandas(enc, "word string, n_tok long")
 
 
-def novelty_scores(docs: DataFrame, n: int = 2, text_col: str = "text") -> DataFrame:
-    """First-seen n-gram novelty in corpus order (doc_id ascending):
+def novelty_scores(docs: DataFrame) -> DataFrame:
+    """First-seen bigram novelty in corpus order (doc_id ascending):
     (doc_id, n_grams, n_novel, novelty) where a doc's distinct gram is
     NOVEL iff no lower doc_id contains it — the incremental-information
     metric curriculum/ordering pipelines use to front-load fresh text
@@ -1067,17 +1033,17 @@ def novelty_scores(docs: DataFrame, n: int = 2, text_col: str = "text") -> DataF
     MIN window over the gram hash (no self-join), then one groupBy back
     to doc granularity. Collisions conflate a gram with an earlier one
     (novelty undercount) at the md5 rate — identical in any engine
-    recomputing the same hashes. Docs with fewer than ``n`` words have
+    recomputing the same hashes. Docs with fewer than 2 words have
     no grams and drop out of the output.
     """
     from pyspark.sql import Window
 
-    prepared = docs.select("doc_id", words(F.col(text_col)).alias("ws"))
+    prepared = docs.select("doc_id", words(F.col("text")).alias("ws"))
     gh = F.conv(F.substring(F.md5(F.col("g")), 1, 15), 16, 10).cast("long")
     grams = (
         prepared.select(
             "doc_id",
-            F.explode(F.array_distinct(F.expr(_ngram_array_expr(n)))).alias("g"),
+            F.explode(F.array_distinct(F.expr(_ngram_array_expr(2)))).alias("g"),
         )
         .select("doc_id", gh.alias("gh"))
         .distinct()
@@ -1129,7 +1095,7 @@ def _half_up_mean_term() -> F.Column:
     ).cast("double") / F.lit(1e6)
 
 
-def bigram_lm_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def bigram_lm_scores(docs: DataFrame) -> DataFrame:
     """Conditional add-k-smoothed bigram language-model score per document
     (the CCNet/KenLM-style quality signal, self-trained on the corpus):
     (doc_id, n_bigrams, avg_logprob) with
@@ -1149,7 +1115,7 @@ def bigram_lm_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     and heavily skew-cut by Zipf, the same shape as bigram_surprisal
     which AQE handles (hot keys split by skew-join).
     """
-    prepared = docs.select("doc_id", words(F.col(text_col)).alias("ws"))
+    prepared = docs.select("doc_id", words(F.col("text")).alias("ws"))
     doc_bg = _bigram_rows(prepared, "doc_id")
     cab = doc_bg.groupBy("a", "b").agg(F.count("*").alias("cab"))
     ctx = doc_bg.groupBy("a").agg(F.count("*").alias("ctx"))
@@ -1173,9 +1139,7 @@ def bigram_lm_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def neg_sample_table(
-    docs: DataFrame, table_size: int = 1000, text_col: str = "text"
-) -> DataFrame:
+def neg_sample_table(docs: DataFrame, table_size: int = 1000) -> DataFrame:
     """word2vec-style negative-sampling table: each vocabulary word gets
     draws proportional to count^(3/4) (Mikolov et al.'s unigram
     flattening — the exponent that keeps rare words reachable without
@@ -1206,7 +1170,7 @@ def neg_sample_table(
     if table_size is ever raised past ~10^5, move w_micro to
     DECIMAL(38,0) on both engines first."""
     counts = (
-        docs.select(F.explode(words(F.col(text_col))).alias("w"))
+        docs.select(F.explode(words(F.col("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("c"))
     )
@@ -1243,7 +1207,7 @@ def neg_sample_table(
     )
 
 
-def stupid_backoff_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def stupid_backoff_scores(docs: DataFrame) -> DataFrame:
     """Stupid-backoff 4-gram LM scoring (Brants et al. 2007 — the
     smoothing Google used at web scale precisely BECAUSE it needs no
     normalization pass, and the scoring rule behind infini-gram-style
@@ -1269,7 +1233,7 @@ def stupid_backoff_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     no iteration, no normalization sweep (the whole point of stupid
     backoff); the count tables shard by gram hash at 100 TB exactly like
     a distributed infini-gram index."""
-    prepared = docs.select("doc_id", words(F.col(text_col)).alias("ws"))
+    prepared = docs.select("doc_id", words(F.col("text")).alias("ws"))
     train = prepared.filter(F.col("doc_id") % 2 == 0)
 
     def grams(df: DataFrame, n: int, out: str) -> DataFrame:
@@ -1357,11 +1321,7 @@ def stupid_backoff_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def naive_bayes_lang(
-    docs: DataFrame,
-    label_col: str = "lang",
-    text_col: str = "text",
-) -> DataFrame:
+def naive_bayes_lang(docs: DataFrame) -> DataFrame:
     """Multinomial Naive Bayes classifier, self-trained and self-evaluated
     in one declarative plan: even doc_ids train, odd doc_ids evaluate.
     The model IS two aggregations — per-(class, word) counts and
@@ -1375,7 +1335,7 @@ def naive_bayes_lang(
     = ln prior + sum of per-token terms. Determinism follows the LM-score
     convention (one IEEE division + one ln per term, rounded to 6 and
     summed as exact decimals), so the argmax over (score DESC, label)
-    is engine-independent. Returns (doc_id, <label>, pred_<label>,
+    is engine-independent. Returns (doc_id, lang, pred_lang,
     score, correct) for every eval doc.
 
     Scale shape: the count model is vocab x classes bounded (broadcast
@@ -1383,17 +1343,17 @@ def naive_bayes_lang(
     (doc, class) groupBy — the same Zipf-skewed token-keyed shape as
     bigram_lm_scores, AQE-split on hot words. Nothing iterates.
     """
-    lbl = F.col(label_col)
+    lbl = F.col("lang")
     train = docs.filter(F.col("doc_id") % 2 == 0)
     ev = docs.filter(F.col("doc_id") % 2 == 1)
-    tok_train = train.select(lbl.alias("label"), F.explode(words(F.col(text_col))).alias("w"))
+    tok_train = train.select(lbl.alias("label"), F.explode(words(F.col("text"))).alias("w"))
     cwl = tok_train.groupBy("label", "w").agg(F.count("*").alias("c"))
     n_l = tok_train.groupBy("label").agg(F.count("*").alias("n"))
     vocab = tok_train.agg(F.countDistinct("w").alias("v"))
     pri = train.groupBy(lbl.alias("label")).agg(F.count("*").alias("dl"))
     tot = train.agg(F.count("*").alias("td"))
 
-    tok_ev = ev.select("doc_id", F.explode(words(F.col(text_col))).alias("w"))
+    tok_ev = ev.select("doc_id", F.explode(words(F.col("text"))).alias("w"))
     term = F.round(
         F.log((F.coalesce(F.col("c"), F.lit(0)) + 1) / (F.col("n") + F.col("v"))), 6
     ).cast("decimal(18,6)")
@@ -1424,19 +1384,14 @@ def naive_bayes_lang(
         .select(
             "doc_id",
             lbl,
-            F.col("label").alias(f"pred_{label_col}"),
+            F.col("label").alias("pred_lang"),
             F.col("score").cast("double").alias("score"),
             (F.col("label") == lbl).cast("int").alias("correct"),
         )
     )
 
 
-def gopher_rules(
-    docs: DataFrame,
-    text_col: str = "text",
-    stopwords: tuple[str, ...] = GOPHER_STOPWORDS,
-    min_stopwords: int = 2,
-) -> DataFrame:
+def gopher_rules(docs: DataFrame, stopwords: tuple[str, ...] = GOPHER_STOPWORDS) -> DataFrame:
     """Gopher rule-based quality filter (Rae et al. 2021 §A1.1) as one
     narrow projection: per-document rule flags (0/1) plus the combined
     verdict. Every ratio threshold is evaluated in cross-multiplied
@@ -1448,12 +1403,12 @@ def gopher_rules(
     Rules: 50 <= word count <= 100k; mean word length in [3, 10];
     '#'/'...' symbol-to-word ratio < 0.1; < 90% of lines bullet-led;
     < 30% of lines ellipsis-ended; >= 80% of words contain an alphabetic
-    character; >= ``min_stopwords`` of the ``stopwords`` probe set
+    character; >= 2 of the ``stopwords`` probe set
     present (default: the canonical 8 Gopher function words — callers
     scoring a corpus whose language lacks them substitute its own
     function-word inventory, which is the rule's intent).
     """
-    t = F.col(text_col)
+    t = F.col("text")
     ws = words(t)
     lines = F.split(t, "\n")
     n_words = F.size(ws).cast("long")
@@ -1483,7 +1438,7 @@ def gopher_rules(
         flag(10 * n_bullet < 9 * n_lines).alias("ok_bullet"),
         flag(10 * n_ell_lines < 3 * n_lines).alias("ok_ellipsis"),
         flag(5 * n_alpha >= 4 * n_words).alias("ok_alpha"),
-        flag(n_stop >= min_stopwords).alias("ok_stopwords"),
+        flag(n_stop >= 2).alias("ok_stopwords"),
     )
     all_ok = (
         (F.col("ok_word_count") == 1)
@@ -1497,7 +1452,7 @@ def gopher_rules(
     return out.withColumn("keep_doc", all_ok.cast("int"))
 
 
-def kneser_ney_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def kneser_ney_scores(docs: DataFrame) -> DataFrame:
     """Interpolated Kneser-Ney bigram LM score per document — the
     canonical n-gram smoothing (absolute discount D = 3/4, continuation
     probabilities from distinct-predecessor counts):
@@ -1520,7 +1475,7 @@ def kneser_ney_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     distinct-predecessor) + one broadcast scalar; the scoring join is
     bigram-keyed, Zipf-skewed like bigram_lm_scores (AQE skew-split).
     """
-    prepared = docs.select("doc_id", words(F.col(text_col)).alias("ws"))
+    prepared = docs.select("doc_id", words(F.col("text")).alias("ws"))
     doc_bg = _bigram_rows(prepared, "doc_id")
     cab = doc_bg.groupBy("a", "b").agg(F.count("*").alias("cab"))
     # Round 11 negative result: deriving ctx/N1+/T from the cab COUNT
@@ -1558,12 +1513,7 @@ def kneser_ney_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def bleu2_pairs(
-    docs: DataFrame,
-    pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bleu2_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """(id_a, id_b, len_ref, len_hyp, p1_6, p2_6, bleu2_6): BLEU-2 between
     candidate near-duplicate pairs — the MT-style overlap score that
     answers what Jaccard cannot: Jaccard sees shingle SETS, BLEU's
@@ -1585,8 +1535,8 @@ def bleu2_pairs(
     groupBy, all narrow rows.
     """
     ws = docs.select(
-        F.col(id_col).alias("id"),
-        F.filter(F.split(F.col(text_col), " "), lambda x: x != "").alias("ws"),
+        F.col("doc_id").alias("id"),
+        F.filter(F.split(F.col("text"), " "), lambda x: x != "").alias("ws"),
     )
     uni = ws.select(
         "id", F.lit(1).alias("n"), F.explode("ws").alias("g")
@@ -1671,9 +1621,7 @@ def bleu2_pairs(
     )
 
 
-def bigram_lm_scores_cross(
-    train_docs: DataFrame, score_docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def bigram_lm_scores_cross(train_docs: DataFrame, score_docs: DataFrame) -> DataFrame:
     """Cross-trained conditional bigram LM: counts, contexts and vocabulary
     come from ``train_docs`` ONLY; every document in ``score_docs`` is
     scored against that fixed model — the actual CCNet design (Wenzek et
@@ -1692,7 +1640,7 @@ def bigram_lm_scores_cross(
     bigram-keyed left joins of the crawl stream against them — at 100 TB
     the reference model broadcasts and the crawl never shuffles twice.
     """
-    t_prep = train_docs.select(words(F.col(text_col)).alias("ws"))
+    t_prep = train_docs.select(words(F.col("text")).alias("ws"))
     t_bg = _bigram_rows(t_prep)
     cab = t_bg.groupBy("a", "b").agg(F.count("*").alias("cab"))
     ctx = t_bg.groupBy("a").agg(F.count("*").alias("ctx"))
@@ -1700,7 +1648,7 @@ def bigram_lm_scores_cross(
         F.countDistinct("w").alias("v")
     )
     s_bg = _bigram_rows(
-        score_docs.select("doc_id", words(F.col(text_col)).alias("ws")), "doc_id"
+        score_docs.select("doc_id", words(F.col("text")).alias("ws")), "doc_id"
     )
     # |V|=0 (empty/degenerate train_docs) would make the smoothing
     # denominator 0 — Spark double division then yields Infinity->null

@@ -164,7 +164,7 @@ def dd_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs 3-word-shingle Jaccard on a bounded slice (quadratic —
     the verification operator, not the scale path; see dd_minhash_lsh)."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return D.jaccard_pairs(D.word_shingles(docs, 3), threshold=0.5)
+    return D.jaccard_pairs(D.word_shingles(docs), threshold=0.5)
 
 
 @query(
@@ -187,7 +187,7 @@ def dd_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured via worktree). spread_scan cuts the real cost instead:
     interleaved A/B (sf0.1) 0.99 -> 0.70s median, min 0.82 -> 0.62."""
     docs = spread_scan(load_table(spark, sf_dir, "documents"))
-    sig = D.minhash_signatures(D.word_shingle_stream(docs, 3), num_hashes=8)
+    sig = D.minhash_signatures(D.word_shingle_stream(docs))
     return sig.select(F.col("id").alias("doc_id"), *[f"mh{j}" for j in range(8)])
 
 
@@ -209,7 +209,7 @@ def dd_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full near-dup scale pipeline: shingle -> minhash -> LSH bands ->
     candidates -> exact-Jaccard verify (linear-time candidate generation)."""
     docs = load_table(spark, sf_dir, "documents")
-    return D.minhash_near_duplicates(docs, threshold=0.5)
+    return D.minhash_near_duplicates(docs)
 
 
 def _simhash_bit_sums_sql(bits: int = 32) -> str:
@@ -246,7 +246,7 @@ def _simhash_cte(bits: int = 32, weighted: bool = False) -> str:
     )
 
 
-_SIMHASH_CTE = _simhash_cte(32)
+_SIMHASH_CTE = _simhash_cte()
 
 
 def _simhash_band_pairs_sql(key: str, extra: str = "") -> str:
@@ -297,7 +297,7 @@ def dd_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance <= 6 (all-pairs on the
     bounded doc set; the scale path buckets signature bytes first)."""
     docs = load_table(spark, sf_dir, "documents")
-    return D.simhash_near_pairs(D.simhash(docs), max_hamming=6)
+    return D.simhash_near_pairs(D.simhash(docs))
 
 
 @query(
@@ -321,7 +321,7 @@ def dd_simhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     ALL pairs on this corpus — a threshold that loose makes any method
     output-bound)."""
     docs = load_table(spark, sf_dir, "documents")
-    return D.simhash_banded_pairs(D.simhash(docs), max_hamming=3, bits=32, bands=4)
+    return D.simhash_banded_pairs(D.simhash(docs), max_hamming=3, bands=4)
 
 
 @query(
@@ -362,7 +362,7 @@ def dd_simhash_banded_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     n = docs.count()
-    bb = derived_prefix_bits(n, target_occupancy=64, min_bits=4, max_bits=15)
+    bb = derived_prefix_bits(n, max_bits=15)
     pairs = D.simhash_banded_pairs(
         D.simhash(docs, bits=60), max_hamming=3, bits=4 * bb, bands=4
     )
@@ -560,7 +560,7 @@ def dd_repeated_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # JVM CPU; round-12 interleaved A/B (sf0.1): 2.37 -> 1.74s median
     # (1.37x), min 2.31 -> 1.63. No-op on any multi-split corpus.
     docs = spread_scan(load_table(spark, sf_dir, "documents"))
-    return D.repeated_ngram_stats(docs, n=8, min_docs=2)
+    return D.repeated_ngram_stats(docs)
 
 
 @query(
@@ -584,7 +584,7 @@ def dd_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     existing = docs.filter(F.col("doc_id") < 250)
     batch = docs.filter(F.col("doc_id") >= 250)
-    return D.incremental_minhash_dedup(existing, batch, threshold=0.5)
+    return D.incremental_minhash_dedup(existing, batch)
 
 
 # Not benched: its edges come from the all-pairs cosine verification
@@ -669,7 +669,7 @@ def dd_keep_best_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.graph import duplicate_clusters, canonical_representatives
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = D.minhash_near_duplicates(docs, threshold=0.5).select("id_a", "id_b")
+    pairs = D.minhash_near_duplicates(docs).select("id_a", "id_b")
     nodes = docs.select(F.col("doc_id").alias("id"))
     clusters = duplicate_clusters(nodes, pairs)
     quality = docs.select(F.col("doc_id").alias("id"), F.col("n_chars").alias("quality"))
@@ -747,7 +747,7 @@ def dd_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded slice (verification tier, like dd_ngram_jaccard); at scale the
     same score runs on LSH candidates."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    sh = D.word_shingles(docs, 3)
+    sh = D.word_shingles(docs)
     sizes = sh.groupBy(F.col("id").alias("s_id")).agg(F.count("*").alias("n"))
     a = sh.select(F.col("id").alias("id_a"), "g")
     b = sh.select(F.col("id").alias("id_b"), F.col("g").alias("g_b"))
@@ -794,12 +794,12 @@ def dd_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     huge one has low Jaccard) — at scale pair this with the repeated
     n-gram span stats for the asymmetric tail."""
     docs = load_table(spark, sf_dir, "documents")
-    sh = D.word_shingles(docs, 3)
+    sh = D.word_shingles(docs)
     # signatures from the NON-distinct shingle stream (min over a multiset
     # equals min over its set) — the distinct set `sh` is needed only for
     # the set-semantics containment arithmetic below
-    sig = D.minhash_signatures(D.word_shingle_stream(docs, 3), num_hashes=8)
-    cand = D.lsh_candidate_pairs(sig, bands=4, rows_per_band=2)
+    sig = D.minhash_signatures(D.word_shingle_stream(docs))
+    cand = D.lsh_candidate_pairs(sig)
     sizes = sh.groupBy(F.col("id").alias("s_id")).agg(F.count("*").alias("n"))
     a = sh.select(F.col("id").alias("ca"), F.col("g").alias("g_a"))
     b = sh.select(F.col("id").alias("cb"), F.col("g").alias("g_b"))
@@ -884,7 +884,7 @@ def dd_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     its globally-first occurrence; later occurrences' tokens are scrubbed
     and the hash of each surviving token sequence is emitted."""
     docs = load_table(spark, sf_dir, "documents")
-    return D.span_scrub(docs, n=5)
+    return D.span_scrub(docs)
 
 
 @query(
@@ -915,10 +915,10 @@ def dd_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup twin of sim_candidate_recall. The all-pairs side is the bounded
     VERIFICATION operator (oracle-scale only); the banding side is the
     linear scale path whose recall this certifies."""
-    sh = D.word_shingles(docs := load_table(spark, sf_dir, "documents"), 3)
+    sh = D.word_shingles(docs := load_table(spark, sf_dir, "documents"))
     truth = D.jaccard_pairs(sh, threshold=0.5).select("id_a", "id_b")
-    sig = D.minhash_signatures(D.word_shingle_stream(docs, 3), num_hashes=8)
-    cand = D.lsh_candidate_pairs(sig, bands=4, rows_per_band=2).select(
+    sig = D.minhash_signatures(D.word_shingle_stream(docs))
+    cand = D.lsh_candidate_pairs(sig).select(
         "id_a", "id_b"
     )
     hit = truth.join(cand, ["id_a", "id_b"], "left_semi")
@@ -970,7 +970,7 @@ def dd_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.graph import duplicate_clusters
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = D.minhash_near_duplicates(docs, threshold=0.5).select("id_a", "id_b")
+    pairs = D.minhash_near_duplicates(docs).select("id_a", "id_b")
     clusters = duplicate_clusters(
         docs.select(F.col("doc_id").alias("id")), pairs
     )
@@ -1099,7 +1099,7 @@ def dd_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.dedup import prefix_jaccard_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    return prefix_jaccard_pairs(D.word_shingles(docs, 3), threshold=0.6)
+    return prefix_jaccard_pairs(D.word_shingles(docs), threshold=0.6)
 
 
 @query(
@@ -1133,7 +1133,7 @@ def dd_soft_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     nf = docs.select(
-        "doc_id", F.md5(dedup_normal_form("text")).alias("norm_hash")
+        "doc_id", F.md5(dedup_normal_form()).alias("norm_hash")
     )
     grp = nf.groupBy("norm_hash").agg(
         F.count("*").alias("group_size"), F.min("doc_id").alias("group_id")
@@ -1297,9 +1297,9 @@ def dd_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-file scan; round-12 interleaved A/B (sf0.1):
     # 2.54 -> 2.05s median (1.24x), min 2.25 -> 1.95.
     docs = spread_scan(load_table(spark, sf_dir, "documents"))
-    sh = D.word_shingles(docs, 3)
-    sig = D.minhash_signatures(D.word_shingle_stream(docs, 3), 8)
-    cand = D.lsh_candidate_pairs(sig, 4, 2)
+    sh = D.word_shingles(docs)
+    sig = D.minhash_signatures(D.word_shingle_stream(docs))
+    cand = D.lsh_candidate_pairs(sig)
     sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
     a = sh.select(F.col("id").alias("id_a"), "g")
     b = sh.select(F.col("id").alias("id_b"), "g")
@@ -1412,14 +1412,14 @@ def dd_band_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators import dedup as D
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = D.word_shingles(docs, 3)
+    sh = D.word_shingles(docs)
     # the all-pairs truth subtree is the dominant cost and is referenced
     # FIVE times (four left-semi probes + the n_true count) — persist it
     # so it evaluates once (measured 6.8s -> its recompute share at sf0.1)
     truth = cachereg.track(
         D.jaccard_pairs(sh, threshold=0.5).select("id_a", "id_b").persist()
     )
-    sig = D.minhash_signatures(D.word_shingle_stream(docs, 3), num_hashes=8)
+    sig = D.minhash_signatures(D.word_shingle_stream(docs))
     n_true = truth.agg(F.count("*").cast("long").alias("n_true"))
     # Round 12: ONE melt over all four bandings + ONE (cfg, band, key)
     # shuffle (lsh_candidate_pairs_multi) replaces four per-config
@@ -1521,8 +1521,8 @@ def dd_bleu_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.text import bleu2_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    sig = D.minhash_signatures(D.word_shingle_stream(docs, 3), num_hashes=8)
-    cand = D.lsh_candidate_pairs(sig, bands=4, rows_per_band=2, max_bucket=1000)
+    sig = D.minhash_signatures(D.word_shingle_stream(docs))
+    cand = D.lsh_candidate_pairs(sig)
     return bleu2_pairs(docs, cand)
 
 
@@ -1586,9 +1586,9 @@ def dd_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     tunes on. Composes two already-certified pipelines; one full-outer
     join of two bounded pair sets, three counts."""
     docs = load_table(spark, sf_dir, "documents")
-    mh = D.minhash_near_duplicates(docs, threshold=0.5).select("id_a", "id_b")
+    mh = D.minhash_near_duplicates(docs).select("id_a", "id_b")
     sh = D.simhash_banded_pairs(
-        D.simhash(docs), max_hamming=3, bits=32, bands=4
+        D.simhash(docs), max_hamming=3, bands=4
     ).select("id_a", "id_b")
     u = mh.withColumn("in_m", F.lit(True)).join(
         sh.withColumn("in_s", F.lit(True)), ["id_a", "id_b"], "full_outer"
@@ -1670,8 +1670,8 @@ def dd_rouge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2.00 -> 1.75s median, min 1.98 -> 1.66. The otherwise-similar
     # dd_bleu_pairs LOST the same A/B (2.74 -> 3.21) and stays natural.
     docs = spread_scan(load_table(spark, sf_dir, "documents"))
-    sig = D.minhash_signatures(D.word_shingle_stream(docs, 3), num_hashes=8)
-    cand = D.lsh_candidate_pairs(sig, bands=4, rows_per_band=2, max_bucket=1000)
+    sig = D.minhash_signatures(D.word_shingle_stream(docs))
+    cand = D.lsh_candidate_pairs(sig)
     ws = docs.select(
         F.col("doc_id").alias("id"),
         F.filter(F.split(F.col("text"), " "), lambda x: x != "").alias("ws"),
@@ -1820,8 +1820,8 @@ def dd_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3.32 -> 1.91s median (1.74x), min 2.94 -> 1.66. No-op on any
     # multi-split corpus.
     docs = spread_scan(load_table(spark, sf_dir, "documents"))
-    fp = D.winnowing_fingerprints(docs, n=3, window=4)
-    return D.winnowing_pairs(fp, min_shared=2, max_docs_per_fp=64)
+    fp = D.winnowing_fingerprints(docs)
+    return D.winnowing_pairs(fp)
 
 
 @query(
@@ -1933,4 +1933,4 @@ def dd_suffix_lcp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan-task-pinned; round-12 interleaved A/B (sf0.1):
     # 1.53 -> 1.04s median (1.48x), min 1.43 -> 1.00.
     docs = spread_scan(load_table(spark, sf_dir, "documents"))
-    return D.suffix_lcp_spans(docs, k_max=16)
+    return D.suffix_lcp_spans(docs)

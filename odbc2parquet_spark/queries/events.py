@@ -89,7 +89,7 @@ def ev_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lag -> new-session flag -> running sum -> group), proving the merge
     semantics. Session end = last event + gap, per Spark's definition."""
     ev = load_table(spark, sf_dir, "events")
-    return sessionized_counts(ev, gap="10 minutes").select(
+    return sessionized_counts(ev).select(
         "user_id",
         F.unix_seconds(F.col("session_start").cast("timestamp")).alias("session_start"),
         F.unix_seconds(F.col("session_end").cast("timestamp")).alias("session_end"),
@@ -371,7 +371,7 @@ def ev_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     buys = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
-    j = stream_stream_interval_join(views, buys, key="user_id", within="10 minutes")
+    j = stream_stream_interval_join(views, buys, key="user_id")
     return j.select(
         F.col("l_key").alias("user_id"),
         F.col("l_event_id").alias("l_event"),
@@ -420,7 +420,7 @@ def ev_rolling_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     return (
-        rolling_trend(ev, "user_id", ["ts", "event_id"], "value", n=8)
+        rolling_trend(ev, "user_id", ["ts", "event_id"], "value")
         .filter(F.col("event_id") % 97 == 0)
         .select("user_id", "event_id", "n_window", "slope")
     )
@@ -460,7 +460,7 @@ def ev_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.quality import mad_outliers
 
     ev = load_table(spark, sf_dir, "events")
-    flagged = mad_outliers(ev, "value", "event_type", k=4.4478)
+    flagged = mad_outliers(ev, "value", "event_type")
     return (
         flagged.groupBy("event_type", "med", "mad")
         .agg(
@@ -512,7 +512,7 @@ def ev_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.ranges import sweep_line_concurrency
 
     ev = load_table(spark, sf_dir, "events")
-    sess = sessionized_counts(ev, gap="10 minutes").select(
+    sess = sessionized_counts(ev).select(
         F.unix_seconds(F.col("session_start").cast("timestamp")).alias("s"),
         F.unix_seconds(F.col("session_end").cast("timestamp")).alias("e"),
     )
@@ -610,7 +610,7 @@ def ev_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("spend")
     )
-    a = ab_assign(users, "user_id", salt="exp", n_variants=2)
+    a = ab_assign(users, "user_id")
     spend = F.col("spend")
     agg = a.agg(
         F.sum((F.col("variant") == "A").cast("long")).alias("n_a"),
@@ -735,7 +735,7 @@ def _signup_life_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("t_obs"),
         F.col("conv_ts").isNotNull().alias("converted"),
     )
-    return km_hazard_table(subj, "t_obs", "converted")
+    return km_hazard_table(subj)
 
 
 @query(
@@ -806,7 +806,7 @@ def ev_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.quality import winsorize
 
     ev = load_table(spark, sf_dir, "events")
-    w = winsorize(ev, "value", "event_type", lo=0.05, hi=0.95)
+    w = winsorize(ev, "value", "event_type")
     return (
         w.groupBy("event_type", "p_lo", "p_hi")
         .agg(
@@ -884,7 +884,7 @@ def ev_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     tch = ev.filter(F.col("event_type").isin("click", "view", "signup")).select(
         "user_id", "ts", F.col("event_type").alias("channel")
     )
-    per = linear_attribution(conv, tch, key="user_id", window="7 days")
+    per = linear_attribution(conv, tch, key="user_id")
     return (
         per.groupBy("channel")
         .agg(
@@ -1003,7 +1003,7 @@ def ev_resample_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.rollup import resample_forward_fill
 
     ev = load_table(spark, sf_dir, "events")
-    return resample_forward_fill(ev, bucket_seconds=86400)
+    return resample_forward_fill(ev)
 
 
 _TYPE_WEIGHTS = [
@@ -1036,7 +1036,7 @@ def ev_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     dim = spark.createDataFrame(_TYPE_WEIGHTS, ["event_type", "weight"])
-    j = salted_join(ev, dim, "event_type", salt=16, distribute_by="event_id")
+    j = salted_join(ev, dim, "event_type", distribute_by="event_id")
     return j.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum((F.col("value") * F.col("weight")).cast("decimal(18,6)"))
@@ -1077,11 +1077,20 @@ def ev_asof_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: the event's epoch day (``ts`` seconds div 86400), oracle side
+_DAY = "CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)"
+
+
+def _epoch_day() -> F.Column:
+    """The event's epoch day as a long column: the Spark side of ``_DAY``."""
+    return F.floor(F.unix_seconds(F.col("ts").cast("timestamp")) / 86400).cast("long")
+
+
 @query(
     "ev_kmv_daily_users",
     oracle=f"""
     WITH h AS (
-        SELECT DISTINCT CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day,
+        SELECT DISTINCT {_DAY} AS day,
                CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15)
                     AS BIGINT) AS h
         FROM events
@@ -1105,8 +1114,8 @@ def ev_kmv_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.sketches import kmv_distinct_per_group
 
     ev = load_table(spark, sf_dir, "events")
-    day = F.floor(F.unix_seconds(F.col("ts").cast("timestamp")) / 86400).cast("long")
-    return kmv_distinct_per_group(ev.select(day.alias("day"), "user_id"), ["day"], "user_id", k=64)
+    day = _epoch_day()
+    return kmv_distinct_per_group(ev.select(day.alias("day"), "user_id"), ["day"], "user_id")
 
 
 @query(
@@ -1154,7 +1163,7 @@ def ev_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lpad(F.col("event_id").cast("string"), 12, "0"),
     )
     return late_event_audit(
-        ev.withColumn("arrival", arrival), delay_seconds=600, order_col="arrival"
+        ev.withColumn("arrival", arrival), order_col="arrival"
     )
 
 
@@ -1357,7 +1366,7 @@ def ev_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.joins import skew_profile
 
     ev = load_table(spark, sf_dir, "events")
-    return skew_profile(ev, "user_id", top_n=5, parallelism=32)
+    return skew_profile(ev, "user_id")
 
 
 @query(
@@ -1454,7 +1463,7 @@ def ev_resample_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.rollup import resample_interpolate
 
     ev = load_table(spark, sf_dir, "events")
-    return resample_interpolate(ev, bucket_seconds=86400)
+    return resample_interpolate(ev)
 
 
 @query(
@@ -1534,7 +1543,7 @@ def ev_ewma_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     return (
-        ewma_last_n(ev, "user_id", ["ts", "event_id"], "value", n=8)
+        ewma_last_n(ev, "user_id", ["ts", "event_id"], "value")
         .filter(F.col("event_id") % 97 == 0)
         .select("user_id", "event_id", "ewma")
     )
@@ -1582,8 +1591,6 @@ def _hll_estimate_sql(unit: str, regs: str) -> str:
     """
 
 
-_DAY = "CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)"
-
 
 @query(
     "ev_hll_daily_users",
@@ -1600,9 +1607,9 @@ def ev_hll_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.sketches import hll_distinct_per_group
 
     ev = load_table(spark, sf_dir, "events")
-    day = F.floor(F.unix_seconds(F.col("ts").cast("timestamp")) / 86400).cast("long")
+    day = _epoch_day()
     return hll_distinct_per_group(
-        ev.select(day.alias("day"), "user_id"), ["day"], "user_id", p=8
+        ev.select(day.alias("day"), "user_id"), ["day"], "user_id"
     )
 
 
@@ -1662,14 +1669,14 @@ def ev_hll_weekly_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = load_table(spark, sf_dir, "events")
-    day = F.floor(F.unix_seconds(F.col("ts").cast("timestamp")) / 86400).cast("long")
+    day = _epoch_day()
     week = F.floor(day / F.lit(7)).cast("long")
     daily = hll_registers(
         ev.select(week.alias("week"), day.alias("day"), "user_id"),
-        ["week", "day"], "user_id", p=8,
+        ["week", "day"], "user_id",
     )
     weekly = daily.groupBy("week", "reg").agg(F.max("mrho").alias("mrho"))
-    return hll_estimate_from_registers(weekly, ["week"], p=8)
+    return hll_estimate_from_registers(weekly, ["week"])
 
 
 @query(
@@ -1705,9 +1712,9 @@ def ev_hll_cumulative(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = load_table(spark, sf_dir, "events")
-    day = F.floor(F.unix_seconds(F.col("ts").cast("timestamp")) / 86400).cast("long")
+    day = _epoch_day()
     regs = hll_registers(
-        ev.select(day.alias("day"), "user_id"), ["day"], "user_id", p=8
+        ev.select(day.alias("day"), "user_id"), ["day"], "user_id"
     )
     # DENSIFY first: a register touched on day d but not day d+1 has no
     # (d+1, reg) row, and a row-less register cannot be carried forward
@@ -1724,18 +1731,18 @@ def ev_hll_cumulative(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("day", "reg", F.max("mrho").over(w).alias("mrho"))
         .filter(F.col("mrho").isNotNull())
     )
-    return hll_estimate_from_registers(run, ["day"], p=8)
+    return hll_estimate_from_registers(run, ["day"])
 
 
 @query(
     "ev_new_vs_returning",
-    oracle="""
+    oracle=f"""
     WITH firsts AS (
-        SELECT user_id, MIN(CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)) AS first_day
+        SELECT user_id, MIN({_DAY}) AS first_day
         FROM events GROUP BY user_id
     ),
     daily AS (
-        SELECT DISTINCT CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day, user_id
+        SELECT DISTINCT {_DAY} AS day, user_id
         FROM events
     )
     SELECT day,
@@ -1754,7 +1761,7 @@ def ev_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed on user_id, so they share one exchange under AQE; no window
     over the event log."""
     ev = load_table(spark, sf_dir, "events")
-    day = F.floor(F.unix_seconds(F.col("ts").cast("timestamp")) / 86400).cast("long")
+    day = _epoch_day()
     daily = ev.select(day.alias("day"), "user_id").distinct()
     firsts = daily.groupBy("user_id").agg(F.min("day").alias("first_day"))
     return (
@@ -1768,9 +1775,9 @@ def ev_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # shared oracle CTEs: each event type's daily mean value, numbered by day
-_DAILY_SERIES_CTE = """
+_DAILY_SERIES_CTE = f"""
     ev AS (
-        SELECT event_type, CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day,
+        SELECT event_type, {_DAY} AS day,
                CAST(value AS DECIMAL(18,6)) AS vd
         FROM events
     ),
@@ -1791,7 +1798,7 @@ def _daily_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(key, day, x): each event type's decimal-exact daily mean value —
     the Spark side of ``_DAILY_SERIES_CTE``."""
     ev = load_table(spark, sf_dir, "events")
-    day = F.floor(F.unix_seconds(F.col("ts").cast("timestamp")) / 86400).cast("long")
+    day = _epoch_day()
     dec = F.col("value").cast("decimal(18,6)")
     return (
         ev.select(F.col("event_type").alias("key"), day.alias("day"), dec.alias("vd"))
@@ -1833,16 +1840,16 @@ def ev_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     classical forecasting trio with ev_stl_decompose and ev_mase_eval."""
     from odbc2parquet_spark.operators.rollup import holt_forecast
 
-    out = holt_forecast(_daily_series(spark, sf_dir), "key", "day", "x", horizons=(1, 7))
+    out = holt_forecast(_daily_series(spark, sf_dir))
     return out.select(F.col("key").alias("event_type"), "n_days", "level", "trend", "f1", "f7")
 
 
 @query(
     "ev_decay_topk",
-    oracle="""
+    oracle=f"""
     WITH d AS (
         SELECT event_type, user_id,
-               CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day
+               {_DAY} AS day
         FROM events
     ),
     anchor AS (SELECT MAX(day) AS a FROM d),
@@ -2034,10 +2041,10 @@ def ev_kmv_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ev_stickiness",
-    oracle="""
+    oracle=f"""
     WITH d AS (
         SELECT DISTINCT user_id,
-               CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day
+               {_DAY} AS day
         FROM events
     ),
     days AS (SELECT DISTINCT day FROM d),
@@ -2294,7 +2301,6 @@ def ev_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         tch,
         key="user_id",
         channels=["click", "error", "signup", "view"],
-        window="7 days",
     )
 
 
@@ -2405,7 +2411,7 @@ def ev_removal_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.attribution import markov_removal_effect
 
     ev = load_table(spark, sf_dir, "events")
-    return markov_removal_effect(ev, iterations=8)
+    return markov_removal_effect(ev)
 
 
 @query(
@@ -2642,7 +2648,7 @@ def ev_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.rollup import holt_winters_forecast
 
     daily = _daily_series(spark, sf_dir)
-    out = holt_winters_forecast(daily, "key", "day", "x", period=7, horizons=(1, 7))
+    out = holt_winters_forecast(daily)
     return out.select(
         F.col("key").alias("event_type"), "n_days", "level", "trend", "f1", "f7"
     )
@@ -2700,7 +2706,7 @@ def ev_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.attribution import journey_occupancy
 
     ev = load_table(spark, sf_dir, "events")
-    return journey_occupancy(ev, iterations=8)
+    return journey_occupancy(ev)
 
 
 @query(
@@ -2744,7 +2750,7 @@ def ev_hw_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.rollup import hw_backtest
 
     daily = _daily_series(spark, sf_dir)
-    out = hw_backtest(daily, "key", "day", "x", period=7, n_origins=3)
+    out = hw_backtest(daily)
     return out.select(
         F.col("key").alias("event_type"),
         "origin",

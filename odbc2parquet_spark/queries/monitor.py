@@ -86,7 +86,7 @@ def ev_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold the caller does over 10 rows."""
     ev = load_table(spark, sf_dir, "events")
     return psi_drift(
-        ev, "value", F.col("event_type") == "purchase", n_bins=10
+        ev, "value", F.col("event_type") == "purchase"
     ).orderBy("bin")
 
 
@@ -323,7 +323,7 @@ def sim_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical integers; covariance_matrix_decimal is the pure-Catalyst
     twin, equality-tested in tests/test_drift.py."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return covariance_matrix(emb, "embedding", dim=64).orderBy("i", "j")
+    return covariance_matrix(emb, dim=64).orderBy("i", "j")
 
 
 @query(
@@ -379,7 +379,7 @@ def sim_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     float steps land on identical doubles before ROUND. Zero-variance
     dims emit NULL via the same CASE on both engines."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return correlation_matrix(emb, "embedding", dim=64).orderBy("i", "j")
+    return correlation_matrix(emb, dim=64).orderBy("i", "j")
 
 
 @query(
@@ -644,7 +644,7 @@ def ev_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("day")
     ).agg(F.sum(F.col("value").cast("decimal(18,6)")).alias("val_dec"))
-    return seasonal_decompose(daily, "day", "val_dec", period=7).orderBy("day")
+    return seasonal_decompose(daily).orderBy("day")
 
 
 @query(
@@ -741,7 +741,7 @@ def ev_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.drift import acf_daily
 
     ev = load_table(spark, sf_dir, "events")
-    return acf_daily(ev, "ts", "event_type", max_lag=7).withColumnRenamed(
+    return acf_daily(ev, "ts", "event_type").withColumnRenamed(
         "g", "event_type"
     )
 
@@ -886,7 +886,7 @@ def sim_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.drift import pca_top_component
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return pca_top_component(emb, "embedding", dim=64, iterations=8)
+    return pca_top_component(emb)
 
 
 @query(

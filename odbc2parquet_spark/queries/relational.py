@@ -703,7 +703,7 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.sketches import kmv_distinct_estimate
 
     o = load_table(spark, sf_dir, "orders")
-    return kmv_distinct_estimate(o, "o_custkey", k=256)
+    return kmv_distinct_estimate(o, "o_custkey")
 
 
 @query(
@@ -722,7 +722,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.sketches import heavy_hitters
 
     li = load_table(spark, sf_dir, "lineitem")
-    return heavy_hitters(li, "l_suppkey", top_n=10)
+    return heavy_hitters(li, "l_suppkey")
 
 
 # --- exact percentiles (sort-based distributed quantiles) ---
@@ -1251,7 +1251,7 @@ def q_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(F.to_date("l_shipdate"), F.to_date(F.lit("1995-01-01"))).alias("x"),
         F.col("l_partkey").alias("y"),
     )
-    return zorder_bucket_stats(li, "x", "y", bits=10, bucket_bits=6)
+    return zorder_bucket_stats(li, "x", "y")
 
 
 @query(
@@ -1615,7 +1615,7 @@ def q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
-    return kmv_overlap_estimate(cust, "c_custkey", orders, "o_custkey", k=256)
+    return kmv_overlap_estimate(cust, "c_custkey", orders, "o_custkey")
 
 
 @query(

@@ -50,7 +50,7 @@ def _lsh_graph_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
         sig = S.lsh_signatures(emb, _N_PLANES, _DIM)
-        return S.lsh_bucket_pairs(sig, prefix_bits=8).select("id_a", "id_b")
+        return S.lsh_bucket_pairs(sig).select("id_a", "id_b")
 
     return _graph_memo(spark, "lsh_graph_pairs", sf_dir, build)
 
@@ -120,7 +120,7 @@ def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-10 for a 10-vector probe set (broadcast the probes,
     stream the corpus — the O(Q x N) baseline)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return S.brute_force_topk(emb, emb.filter(F.col("vec_id") < 10), k=10)
+    return S.brute_force_topk(emb, emb.filter(F.col("vec_id") < 10))
 
 
 def _planes_sql(n_planes: int = None) -> list[str]:
@@ -337,7 +337,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     cent = S.ivf_seed_centroids(emb, _K_CELLS)
     return S.ivf_search(
-        emb, emb.filter(F.col("vec_id") < 10), cent, nprobe=_NPROBE, k=10
+        emb, emb.filter(F.col("vec_id") < 10), cent, nprobe=_NPROBE
     )
 
 
@@ -358,7 +358,7 @@ def sim_lsh_bucket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN candidate pairs sharing an 8-bit signature-prefix bucket — the
     equi-join that replaces the cross join at scale."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return S.lsh_bucket_pairs(S.lsh_signatures(emb, _N_PLANES, _DIM), prefix_bits=8)
+    return S.lsh_bucket_pairs(S.lsh_signatures(emb, _N_PLANES, _DIM))
 
 
 @query(
@@ -404,7 +404,7 @@ def sim_lsh_auto_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_vectors=n,
         max_prefix_bits=_N_PLANES,
     )
-    bits = S.derived_prefix_bits(n, target_occupancy=64, max_bits=_N_PLANES)
+    bits = S.derived_prefix_bits(n, max_bits=_N_PLANES)
     return pairs.withColumn("prefix_bits", F.lit(bits))
 
 
@@ -498,7 +498,7 @@ def sim_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/similarity.centroid_outliers: broadcast centroids, per-row
     fold distance, bounded per-label top-k window)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return S.centroid_outliers(emb, top_k=20)
+    return S.centroid_outliers(emb)
 
 
 @query(
@@ -605,8 +605,8 @@ def sim_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.similarity import pq_assign, pq_codebook
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cb = pq_codebook(emb, m=_PQ_M, k=_PQ_K, dim=64)
-    return pq_assign(emb, cb, m=_PQ_M, dim=64)
+    cb = pq_codebook(emb, m=_PQ_M, k=_PQ_K)
+    return pq_assign(emb, cb, m=_PQ_M)
 
 
 def _pq_index_ctes(p: str = "") -> str:
@@ -658,14 +658,13 @@ def _pq_index_ctes(p: str = "") -> str:
     )"""
 
 
-def _pq_adc_scan_cte(p: str = "") -> str:
-    """The full-scan ADC distance CTE (every probe against every code
-    row) — appended after :func:`_pq_index_ctes`."""
-    return f""",
-    {p}adc AS (
+#: the full-scan ADC distance CTE (every probe against every code row),
+#: appended after :func:`_pq_index_ctes`
+_PQ_ADC_SCAN_CTE = """,
+    adc AS (
         SELECT l.query_id, c.vec_id, SUM(l.pd2) AS adc_dec
-        FROM {p}codes c
-        JOIN {p}lut l ON l.subspace = c.subspace AND l.code = c.code
+        FROM codes c
+        JOIN lut l ON l.subspace = c.subspace AND l.code = c.code
         WHERE c.vec_id != l.query_id
         GROUP BY l.query_id, c.vec_id
     )"""
@@ -688,7 +687,7 @@ def _adc_top10_sql(adc: str = "adc") -> str:
     "sim_pq_adc_topk",
     oracle="WITH "
     + _pq_index_ctes()
-    + _pq_adc_scan_cte()
+    + _PQ_ADC_SCAN_CTE
     + _adc_top10_sql(),
 )
 def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -700,7 +699,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.similarity import pq_adc_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return pq_adc_topk(emb, emb.filter(F.col("vec_id") < 10), m=_PQ_M, k_centroids=_PQ_K, dim=64, top_k=10)
+    return pq_adc_topk(emb, emb.filter(F.col("vec_id") < 10), m=_PQ_M, k_centroids=_PQ_K)
 
 
 #: the composed IVF-PQ chain (IVF assign + probed cells + PQ index +
@@ -753,7 +752,7 @@ def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return ivf_pq_search(
         emb, emb.filter(F.col("vec_id") < 10),
-        nprobe=_NPROBE, k_cells=_K_CELLS, m=_PQ_M, k_centroids=_PQ_K, dim=64, top_k=10,
+        nprobe=_NPROBE, k_cells=_K_CELLS, m=_PQ_M, k_centroids=_PQ_K,
     )
 
 
@@ -823,7 +822,7 @@ def _recall10(emb: DataFrame, probes: DataFrame, approx: DataFrame) -> DataFrame
     """(query_id, n_hits, recall10): per probe, how many of the approximate
     (query_id, neighbor_id) rows ``approx`` are in the exact cosine top 10
     over ``emb`` — the Spark side of ``_recall10_sql``."""
-    exact = S.brute_force_topk(emb, probes, k=10).select("query_id", "neighbor_id")
+    exact = S.brute_force_topk(emb, probes).select("query_id", "neighbor_id")
     hits = (
         approx.join(exact, ["query_id", "neighbor_id"], "left_semi")
         .groupBy("query_id")
@@ -845,7 +844,7 @@ def _recall10(emb: DataFrame, probes: DataFrame, approx: DataFrame) -> DataFrame
     bench=False,
     oracle="WITH "
     + _pq_index_ctes()
-    + _pq_adc_scan_cte()
+    + _PQ_ADC_SCAN_CTE
     + ","
     + _recall10_sql(),
 )
@@ -859,7 +858,7 @@ def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 10)
-    adc = pq_adc_topk(emb, probes, m=_PQ_M, k_centroids=_PQ_K, dim=64, top_k=10).select(
+    adc = pq_adc_topk(emb, probes, m=_PQ_M, k_centroids=_PQ_K).select(
         "query_id", "neighbor_id"
     )
     return _recall10(emb, probes, adc)
@@ -965,10 +964,10 @@ def sim_pq_lloyd_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cb = pq_codebook(emb, m=_PQ_M, k=_PQ_K, dim=64)
-    rcb = pq_refine_codebook(emb, cb, m=_PQ_M, dim=64, iterations=2)
+    cb = pq_codebook(emb, m=_PQ_M, k=_PQ_K)
+    rcb = pq_refine_codebook(emb, cb, m=_PQ_M, iterations=2)
     probes = emb.filter(F.col("vec_id") < 10)
-    adc = pq_adc_topk(emb, probes, m=_PQ_M, dim=64, top_k=10, codebook=rcb).select(
+    adc = pq_adc_topk(emb, probes, m=_PQ_M, codebook=rcb).select(
         "query_id", "neighbor_id"
     )
     return _recall10(emb, probes, adc)
@@ -993,7 +992,7 @@ def sim_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 10)
     approx = ivf_pq_search(
-        emb, probes, nprobe=_NPROBE, k_cells=_K_CELLS, m=_PQ_M, k_centroids=_PQ_K, dim=64, top_k=10
+        emb, probes, nprobe=_NPROBE, k_cells=_K_CELLS, m=_PQ_M, k_centroids=_PQ_K
     ).select("query_id", "neighbor_id")
     return _recall10(emb, probes, approx)
 
@@ -1038,7 +1037,7 @@ def sim_recall_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = emb.filter(F.col("vec_id") < 10)
     approx = ivf_pq_search(
         emb, probes, nprobe=_NPROBE, k_cells=_K_CELLS, m=_PQ_M,
-        k_centroids=_PQ_K, dim=64, top_k=10,
+        k_centroids=_PQ_K,
     ).select("query_id", "neighbor_id")
     per_q = _recall10(emb, probes, approx)
     mean_recall = F.round(F.sum("n_hits") / (10.0 * F.count(F.lit(1))), 6)
@@ -1091,12 +1090,12 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     reranked per source node — the substrate for graph-based semantic
     dedup / diversity sampling."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return S.knn_graph(emb, k=5, n_planes=_N_PLANES, dim=_DIM, prefix_bits=8)
+    return S.knn_graph(emb, n_planes=_N_PLANES, dim=_DIM)
 
 
-def _proj_sql(out_dim: int = 16) -> str:
-    planes = _planes_sql()[:out_dim]
-    scale = 1.0 / (out_dim ** 0.5)
+def _proj_sql() -> str:
+    planes = _planes_sql()[:16]
+    scale = 0.25  # 1 / sqrt(16)
     cols = []
     for j, lits in enumerate(planes):
         d = (
@@ -1121,7 +1120,7 @@ def sim_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle); registered output posexplodes the array so the driver's
     canonicalizer can hash it."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return S.random_projection(emb, out_dim=16, dim=_DIM).select(
+    return S.random_projection(emb, dim=_DIM).select(
         "vec_id", F.posexplode("projected").alias("pos", "val")
     )
 
@@ -1184,7 +1183,7 @@ def sim_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     weighted = _lsh_graph_weighted(spark, sf_dir)
     nodes = emb.select(F.col("vec_id").alias("id"))
-    return pagerank_int(nodes, weighted, iterations=3)
+    return pagerank_int(nodes, weighted)
 
 
 def _ppr_iter_sql(i: int) -> str:
@@ -1226,7 +1225,7 @@ def sim_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("id")
     )
-    return personalized_pagerank_int(weighted, seeds, iterations=3)
+    return personalized_pagerank_int(weighted, seeds)
 
 
 @query(
@@ -1255,7 +1254,7 @@ def sim_multiprobe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1+probes)x candidate volume — same capped single-shuffle shape."""
     emb = load_table(spark, sf_dir, "embeddings")
     return S.lsh_multiprobe_pairs(
-        S.lsh_signatures(emb, _N_PLANES, _DIM), prefix_bits=8, probes=2
+        S.lsh_signatures(emb, _N_PLANES, _DIM)
     )
 
 
@@ -1294,7 +1293,7 @@ def sim_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     total = emb.count()
     sig = S.lsh_signatures(emb, _N_PLANES, _DIM)
-    near = S.lsh_bucket_pairs(sig, prefix_bits=8, directed=True).select(
+    near = S.lsh_bucket_pairs(sig, directed=True).select(
         F.col("id_a").alias("anchor"), F.col("id_b").alias("neighbor")
     )
     slots = F.explode(F.sequence(F.lit(0), F.lit(7))).alias("slot")
@@ -1411,13 +1410,13 @@ def sim_candidate_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id_a", "id_b")
     )
     sig = S.lsh_signatures(emb, _N_PLANES, _DIM)
-    single = S.lsh_bucket_pairs(sig, prefix_bits=8).select(
+    single = S.lsh_bucket_pairs(sig).select(
         F.col("id_a").alias("s_a"), F.col("id_b").alias("s_b")
     )
-    multi = S.lsh_multiprobe_pairs(sig, prefix_bits=8, probes=2).select(
+    multi = S.lsh_multiprobe_pairs(sig).select(
         F.col("id_a").alias("m_a"), F.col("id_b").alias("m_b")
     )
-    banded = S.lsh_banded_pairs(sig, bands=4, band_bits=4).select(
+    banded = S.lsh_banded_pairs(sig).select(
         F.col("id_a").alias("b_a"), F.col("id_b").alias("b_b")
     )
     return (
@@ -1478,7 +1477,7 @@ def sim_banded_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = emb.count()
     bits = min(12, max(4, math.ceil(math.log2(max(n, 1) / 64))))
     return S.lsh_banded_pairs(
-        S.lsh_signatures(emb, 4 * bits, _DIM), bands=4, band_bits=bits
+        S.lsh_signatures(emb, 4 * bits, _DIM), band_bits=bits
     )
 
 
@@ -1512,7 +1511,7 @@ def dd_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedups one cell with zero cross-cell traffic."""
     emb = load_table(spark, sf_dir, "embeddings")
     return S.semantic_dedup_cells(
-        emb, S.ivf_seed_centroids(emb, _K_CELLS), threshold=0.4
+        emb, S.ivf_seed_centroids(emb, _K_CELLS)
     )
 
 
@@ -1547,7 +1546,7 @@ def sim_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.graph import triangle_count
 
     emb = load_table(spark, sf_dir, "embeddings")
-    edges = S.lsh_bucket_pairs(S.lsh_signatures(emb, _N_PLANES, _DIM), prefix_bits=8)
+    edges = S.lsh_bucket_pairs(S.lsh_signatures(emb, _N_PLANES, _DIM))
     return triangle_count(edges.select("id_a", "id_b"))
 
 
@@ -1574,9 +1573,8 @@ def sim_ivf_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     its nearest seed centroid, then the element-wise mean per cell on
     exact decimals (order-independent sums -> both engines agree
     bit-for-bit, where a float avg would depend on reduction order).
-    This puts the core step of the iterative ivf_refine_centroids
-    operator under the oracle gate — the k-means loop itself stays
-    Spark-only, but each step it takes is exactly this query. Narrow
+    This puts the step the ivf_refine_centroids operator takes under
+    the oracle gate. Narrow
     (cell, dim, c) scalar rows; the groupBy ships k*d groups regardless
     of corpus size."""
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1589,9 +1587,10 @@ def sim_ivf_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mmr_oracle(n_probes: int = 8, k_cand: int = 12, k_sel: int = 4) -> str:
-    """Unrolled MMR oracle: the greedy argmax loop as k_sel chained CTEs,
-    generated so the step count can't drift from the Spark side."""
+def _mmr_oracle() -> str:
+    """Unrolled MMR oracle: the greedy argmax loop as 4 chained CTEs (12
+    candidates for each of the first 8 probes), generated so the step
+    count can't drift from the Spark side."""
     head = (
         "\n    WITH "
         + _norms_cte("n")
@@ -1599,12 +1598,12 @@ def _mmr_oracle(n_probes: int = 8, k_cand: int = 12, k_sel: int = 4) -> str:
     scored AS (
         SELECT a.vec_id AS p, b.vec_id AS c,
                ROUND({_DOT} / SQRT(a.nsq * b.nsq), 4) AS rel
-        FROM n a JOIN n b ON a.vec_id < {n_probes} AND a.vec_id != b.vec_id
+        FROM n a JOIN n b ON a.vec_id < 8 AND a.vec_id != b.vec_id
     ),
     cand AS (
         SELECT p, c, rel FROM scored
         QUALIFY ROW_NUMBER() OVER (PARTITION BY p ORDER BY rel DESC, c)
-                <= {k_cand}
+                <= 12
     ),
     sims AS (
         SELECT x.p, x.c AS c1, y.c AS c2,
@@ -1625,7 +1624,7 @@ def _mmr_oracle(n_probes: int = 8, k_cand: int = 12, k_sel: int = 4) -> str:
     )"""
     )
     parts = [head]
-    for t in range(2, k_sel + 1):
+    for t in range(2, 5):
         parts.append(f""",
     sel{t} AS (
         SELECT p, c, ROUND(0.5 * rel - 0.5 * m, 6) AS score FROM st{t - 1}
@@ -1633,7 +1632,7 @@ def _mmr_oracle(n_probes: int = 8, k_cand: int = 12, k_sel: int = 4) -> str:
                                    ORDER BY ROUND(0.5 * rel - 0.5 * m, 6) DESC,
                                             c) = 1
     )""")
-        if t < k_sel:
+        if t < 4:
             parts.append(f""",
     st{t} AS (
         SELECT st.p, st.c, st.rel, GREATEST(st.m, s.s) AS m
@@ -1645,7 +1644,7 @@ def _mmr_oracle(n_probes: int = 8, k_cand: int = 12, k_sel: int = 4) -> str:
         "SELECT p AS query_id, 1 AS step, c AS vec_id, ROUND(rel, 6) AS score"
         " FROM sel1"
     ]
-    for t in range(2, k_sel + 1):
+    for t in range(2, 5):
         selects.append(
             f"SELECT p AS query_id, {t} AS step, c AS vec_id, score FROM sel{t}"
         )
@@ -1663,7 +1662,7 @@ def sim_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     chained CTEs, so a hash match pins every selection and score."""
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 8)
-    return S.mmr_rerank(emb, probes, k_cand=12, k_sel=4, lam=0.5)
+    return S.mmr_rerank(emb, probes)
 
 
 @query(
@@ -1803,7 +1802,7 @@ def sim_jaccard_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-bounded groupBy. Reuses the sim_knn_graph construction, so the
     oracle certifies graph + scoring end-to-end."""
     emb = load_table(spark, sf_dir, "embeddings")
-    knn = S.knn_graph(emb, k=5, n_planes=_N_PLANES, dim=_DIM, prefix_bits=8)
+    knn = S.knn_graph(emb, n_planes=_N_PLANES, dim=_DIM)
     e = knn.select(F.col("vec_id").alias("u"), F.col("neighbor_id").alias("n"))
     deg = e.groupBy("u").agg(F.count("*").alias("d"))
     und = e.select(
@@ -1874,18 +1873,15 @@ def sim_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 10)
-    exact = S.brute_force_topk(emb, probes, k=10).select(
+    exact = S.brute_force_topk(emb, probes).select(
         "query_id", "neighbor_id"
     )
     approx = ivf_pq_nprobe_curve(
         emb,
         probes,
-        nprobes=(1, 2, 4, 8),
         k_cells=_K_CELLS,
         m=_PQ_M,
         k_centroids=_PQ_K,
-        dim=64,
-        top_k=10,
     ).select("nprobe", "query_id", "neighbor_id")
     hits = approx.join(exact, ["query_id", "neighbor_id"]).groupBy(
         "nprobe"
@@ -1948,7 +1944,7 @@ def sim_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
-    knn = S.knn_graph(emb, k=5, n_planes=_N_PLANES, dim=_DIM, prefix_bits=8)
+    knn = S.knn_graph(emb, n_planes=_N_PLANES, dim=_DIM)
     labels = emb.select("vec_id", "label")
     nb = knn.select("vec_id", "neighbor_id").join(
         labels.select(
@@ -2097,7 +2093,7 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_pq_res_ctes(nprobe: int = _NPROBE) -> str:
+def _ivf_pq_res_ctes() -> str:
     """The RESIDUAL IVF-PQ chain as DuckDB CTEs: IVF assign -> residual
     vectors -> residual codebook/codes -> per-(query, probed-cell)
     residual LUT -> cell-restricted ADC. Mirrors
@@ -2142,7 +2138,7 @@ def _ivf_pq_res_ctes(nprobe: int = _NPROBE) -> str:
             FROM rscored
         ) WHERE rn = 1
     ),"""
-        + _qprobe_cte(nprobe)
+        + _qprobe_cte()
         + f""",
     qres AS (
         SELECT qp.query_id, qp.centroid_id,
@@ -2200,7 +2196,6 @@ def sim_ivf_pq_res_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_pq_residual_search(
         emb, emb.filter(F.col("vec_id") < 10),
         nprobe=_NPROBE, k_cells=_K_CELLS, m=_PQ_M, k_centroids=_PQ_K,
-        dim=64, top_k=10,
     )
 
 
@@ -2232,7 +2227,7 @@ def sim_ivf_pq_res_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = emb.filter(F.col("vec_id") < 10)
     approx = ivf_pq_residual_search(
         emb, probes, nprobe=_NPROBE, k_cells=_K_CELLS, m=_PQ_M,
-        k_centroids=_PQ_K, dim=64, top_k=10,
+        k_centroids=_PQ_K,
     ).select("query_id", "neighbor_id")
     return _recall10(emb, probes, approx)
 
@@ -2380,7 +2375,7 @@ def sim_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     sym = _lsh_graph_edges(spark, sf_dir)
     nodes = emb.select(F.col("vec_id").alias("id"))
-    return hits_int(nodes, sym, rounds=2)
+    return hits_int(nodes, sym)
 
 
 def _lpa_iter_sql(i: int) -> str:
@@ -2430,7 +2425,7 @@ def sim_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     sym = _lsh_graph_edges(spark, sf_dir)
     nodes = emb.select(F.col("vec_id").alias("id"))
-    return label_propagation_int(nodes, sym, rounds=3)
+    return label_propagation_int(nodes, sym)
 
 
 @query(

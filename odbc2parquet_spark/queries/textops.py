@@ -191,7 +191,7 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-sampling stub: every-97th-byte markers from the binary payload
     (the explode-to-frames shape of video sampling)."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return M.frame_sample(M.attach_binary(docs), every_n_bytes=97)
+    return M.frame_sample(M.attach_binary(docs))
 
 
 @query(
@@ -222,7 +222,7 @@ def mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cycled checksum arithmetically). The resized binary column is
     dropped for hashing but is the real output of the operator."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    out = M.resize_images(M.attach_binary(docs), 16, 12, 3)
+    out = M.resize_images(M.attach_binary(docs))
     return out.select("doc_id", "out_width", "out_height", "out_n_bytes", "out_checksum")
 
 
@@ -279,7 +279,7 @@ def tx_prepare_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.pipelines import prepare_corpus
 
     docs = load_table(spark, sf_dir, "documents")
-    return prepare_corpus(docs, min_quality=0.5, near_dup_threshold=0.5)
+    return prepare_corpus(docs)
 
 
 @query(
@@ -557,7 +557,7 @@ def tx_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     tails kept): narrow arrays + one posexplode, zero shuffles; chunk
     identity travels as md5 so the output stays narrow."""
     docs = load_table(spark, sf_dir, "documents")
-    return X.chunk_documents(docs, chunk_tokens=32, overlap=8)
+    return X.chunk_documents(docs)
 
 
 @query(
@@ -579,7 +579,7 @@ def mm_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the registered query posexplodes to scalar (doc_id, pos, val) rows so
     the driver's canonicalizer can hash the output."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return M.embed_payloads(M.attach_binary(docs), dim=8).select(
+    return M.embed_payloads(M.attach_binary(docs)).select(
         "doc_id", F.posexplode("embedding").alias("pos", "val")
     )
 
@@ -681,9 +681,9 @@ def tx_cms_word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = docs.select(F.explode(F.split(F.col("text"), " ")).alias("w")).filter(
         F.col("w") != ""
     )
-    sk = count_min_sketch(words, "w", depth=4, width=256)
+    sk = count_min_sketch(words, "w")
     probes = heavy_hitters(words, "w", top_n=20)
-    est = cms_estimate(sk, probes.select("value"), "value", depth=4, width=256)
+    est = cms_estimate(sk, probes.select("value"))
     return est.join(probes, "value").select(
         "value", F.col("est").cast("long").alias("est"), F.col("n").alias("exact_n")
     )
@@ -913,7 +913,7 @@ def tx_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.sharding import epoch_shuffle
 
     docs = load_table(spark, sf_dir, "documents")
-    return epoch_shuffle(docs, n_epochs=2, n_shards=8).select(
+    return epoch_shuffle(docs).select(
         F.col("epoch").cast("long").alias("epoch"), "doc_id", "shard", "pos"
     )
 
@@ -949,7 +949,7 @@ def tx_tokenize_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5. Rank window runs on the aggregated vocab only; the encode pass
     is posexplode -> broadcast join -> one per-doc regroup."""
     docs = load_table(spark, sf_dir, "documents")
-    return X.tokenize_with_vocab(docs, vocab_size=16)
+    return X.tokenize_with_vocab(docs)
 
 
 @query(
@@ -1159,7 +1159,7 @@ def tx_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.pipelines import pipeline_funnel
 
     docs = load_table(spark, sf_dir, "documents")
-    return pipeline_funnel(docs, min_quality=0.5, near_dup_threshold=0.5)
+    return pipeline_funnel(docs)
 
 
 @query(
@@ -1494,7 +1494,7 @@ def mm_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     the digest. (mm_resize remains the byte-level thumbnail twin for
     non-image payloads.)"""
     docs = load_table(spark, sf_dir, "documents")
-    return M.resize_bmp_nearest(M.encode_bmp(docs), out_w=4, out_h=3)
+    return M.resize_bmp_nearest(M.encode_bmp(docs))
 
 
 def _frame_bytes_cte(where: str = "") -> str:
@@ -1542,7 +1542,7 @@ def mm_frame_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     production shape — codec decode of the located samples is the only
     remaining non-container step."""
     docs = load_table(spark, sf_dir, "documents")
-    return M.video_frame_index(M.encode_mp4_samples(docs), every_k=3)
+    return M.video_frame_index(M.encode_mp4_samples(docs))
 
 
 @query(
@@ -1673,7 +1673,7 @@ def mm_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs."""
     docs = load_table(spark, sf_dir, "documents")
     hashes = M.dhash_bmp(M.encode_bmp(docs))
-    return M.dhash_near_pairs(hashes, bands=4, band_bits=14, max_hamming=6)
+    return M.dhash_near_pairs(hashes)
 
 
 @query(
@@ -1775,7 +1775,7 @@ def tx_hash_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread_scan: round-12 interleaved A/B (sf0.1): 1.28 -> 1.00s
     # median (1.28x), min 1.05 -> 0.93.
     docs = spread_scan(load_table(spark, sf_dir, "documents"))
-    return X.hash_embed(docs, dim=16)
+    return X.hash_embed(docs)
 
 
 @query(
@@ -1816,7 +1816,7 @@ def tx_text_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread_scan: round-12 interleaved A/B (sf0.1): 1.36 -> 1.17s
     # median, min 1.32 -> 1.06.
     docs = spread_scan(load_table(spark, sf_dir, "documents"))
-    v = X.hash_embed_vectors(docs, dim=16).select("doc_id", "vec")
+    v = X.hash_embed_vectors(docs).select("doc_id", "vec")
     probes = F.broadcast(
         v.filter(F.col("doc_id") < 4).withColumnsRenamed(
             {"doc_id": "query_id", "vec": "qvec"}
@@ -1931,7 +1931,7 @@ def tx_bpe_learn50(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.text import bpe_learn_batched
 
     docs = load_table(spark, sf_dir, "documents")
-    merges = bpe_learn_batched(docs, n_merges=50, batch=10)
+    merges = bpe_learn_batched(docs)
     return spark.createDataFrame(
         [(i + 1, a, b) for i, (a, b) in enumerate(merges)],
         "merge_rank int, a string, b string",
@@ -1972,7 +1972,7 @@ def tx_pps_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.sampling import pps_sample
 
     docs = load_table(spark, sf_dir, "documents")
-    return pps_sample(docs, "n_chars", k=500, id_col="doc_id")
+    return pps_sample(docs, "n_chars", k=500)
 
 
 @query(
@@ -2202,7 +2202,7 @@ def tx_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest-pinned.
     """
     docs = load_table(spark, sf_dir, "documents")
-    merges = X.bpe_learn_batched(docs, n_merges=20, batch=10)
+    merges = X.bpe_learn_batched(docs, n_merges=20)
     vocab = X.bpe_vocab_token_counts(docs, merges)
     sw = (
         docs.select("source", F.explode(X.words(F.col("text"))).alias("word"))
@@ -2270,7 +2270,7 @@ def mm_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole demux -> signature -> jump chain. Pure integer arithmetic
     end-to-end; one keyed window per document."""
     docs = load_table(spark, sf_dir, "documents")
-    return M.video_scene_cuts(M.encode_mp4_samples(docs), threshold=32)
+    return M.video_scene_cuts(M.encode_mp4_samples(docs))
 
 
 @query(
@@ -2341,7 +2341,7 @@ def tx_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread_scan: round-12 interleaved A/B (sf0.1): 1.05 -> 0.87s
     # median, min 0.97 -> 0.80.
     docs = spread_scan(load_table(spark, sf_dir, "documents"))
-    return X.novelty_scores(docs, n=2)
+    return X.novelty_scores(docs)
 
 
 @query(
@@ -2365,7 +2365,7 @@ def tx_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.sampling import kfold_assign
 
     docs = load_table(spark, sf_dir, "documents")
-    return kfold_assign(docs, "doc_id", n_folds=5, strata_col="lang")
+    return kfold_assign(docs, "doc_id", strata_col="lang")
 
 
 @query(
@@ -2480,10 +2480,10 @@ def mm_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.dedup import prefix_jaccard_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = M.audio_energy_shingles(M.encode_wav(docs), window=64).select(
+    sh = M.audio_energy_shingles(M.encode_wav(docs)).select(
         F.col("doc_id").alias("id"), "g"
     ).distinct()
-    return prefix_jaccard_pairs(sh, threshold=0.8)
+    return prefix_jaccard_pairs(sh)
 
 
 # shared oracle CTEs: each document's words, its adjacent word pairs, and
@@ -2725,7 +2725,7 @@ def mm_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment-sized. The oracle rebuilds the exact samples byte-by-byte in
     SQL, so a hash match certifies true sample-level decode."""
     docs = load_table(spark, sf_dir, "documents")
-    frames = M.decode_audio_frame_energy(M.encode_wav(docs), frame_len=64)
+    frames = M.decode_audio_frame_energy(M.encode_wav(docs))
     active = frames.filter(
         F.col("sum_sq") >= F.lit(650000000).cast("long") * F.col("n")
     )
@@ -3445,7 +3445,7 @@ def mm_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
     so scene membership itself is hash-certified. One keyed window per
     document; see operators/multimodal.video_keyframes."""
     docs = load_table(spark, sf_dir, "documents")
-    return M.video_keyframes(M.encode_mp4_samples(docs), threshold=32)
+    return M.video_keyframes(M.encode_mp4_samples(docs))
 
 
 @query(
@@ -3801,7 +3801,7 @@ def mm_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = lms.filter(
         (F.col("doc_id") % 10 == 3) & (F.col("fi") >= 1)
     ).select("doc_id", (F.col("fi") - 1).alias("fi"), "l")
-    return M.audio_fingerprint_match(lms, probe, top_k=3)
+    return M.audio_fingerprint_match(lms, probe)
 
 
 @query(
@@ -3850,7 +3850,7 @@ def mm_video_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = lm.filter(
         (F.col("doc_id") % 10 == 7) & (F.col("fi") >= 1)
     ).select("doc_id", (F.col("fi") - 1).alias("fi"), "l")
-    return M.audio_fingerprint_match(lm, probe, top_k=3)
+    return M.audio_fingerprint_match(lm, probe)
 
 
 @query(
@@ -3918,7 +3918,7 @@ def tx_ht_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).alias("_drop"),
     ).select("tw")
     exact = y.agg(F.sum("y").alias("exact_words"))
-    sample = pps_sample(docs, "n_chars", k=500, id_col="doc_id")
+    sample = pps_sample(docs, "n_chars", k=500)
     est = (
         sample.join(y, "doc_id")
         .crossJoin(F.broadcast(tot))
@@ -4058,7 +4058,7 @@ def mm_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes = M.phash_dct_bmp(M.encode_bmp(docs)).withColumnRenamed(
         "phash", "dhash"
     )
-    return M.dhash_near_pairs(hashes, bands=7, band_bits=9, max_hamming=6)
+    return M.dhash_near_pairs(hashes, bands=7, band_bits=9)
 
 
 import re as _re
@@ -4140,13 +4140,12 @@ def mm_hash_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     bmps = M.encode_bmp(docs)
     dp = M.dhash_near_pairs(
-        M.dhash_bmp(bmps), bands=4, band_bits=14, max_hamming=6
+        M.dhash_bmp(bmps)
     ).select("id_a", "id_b")
     pp = M.dhash_near_pairs(
         M.phash_dct_bmp(bmps).withColumnRenamed("phash", "dhash"),
         bands=7,
         band_bits=9,
-        max_hamming=6,
     ).select("id_a", "id_b")
     u = pp.withColumn("in_p", F.lit(True)).join(
         dp.withColumn("in_d", F.lit(True)), ["id_a", "id_b"], "full_outer"

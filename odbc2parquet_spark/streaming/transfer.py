@@ -15,14 +15,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def windowed_event_counts(events: DataFrame, window: str = "5 minutes", watermark: str = "10 minutes") -> DataFrame:
+def windowed_event_counts(events: DataFrame, window: str = "5 minutes") -> DataFrame:
     """Watermarked tumbling-window aggregate over the event stream.
 
-    Late rows beyond the watermark are dropped and state is bounded —
+    Late rows beyond the 10-minute watermark are dropped and state is bounded —
     the property that keeps a 100 TB/day stream's state finite.
     """
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", window).alias("w"), "event_type")
         .agg(
             F.count("*").alias("n"),
@@ -38,11 +38,11 @@ def windowed_event_counts(events: DataFrame, window: str = "5 minutes", watermar
     )
 
 
-def sessionized_counts(events: DataFrame, gap: str = "10 minutes", watermark: str = "30 minutes") -> DataFrame:
+def sessionized_counts(events: DataFrame, gap: str = "10 minutes") -> DataFrame:
     """Session windows per user: built-in session_window (gap-based),
     the stateful-operator shape for per-entity streaks."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "30 minutes")
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
@@ -54,47 +54,37 @@ def sessionized_counts(events: DataFrame, gap: str = "10 minutes", watermark: st
     )
 
 
-def stream_stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    within: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Watermarked stream-stream join: right events within ``within`` AFTER
-    the left event, same ``key``.
+def stream_stream_interval_join(left: DataFrame, right: DataFrame, key: str) -> DataFrame:
+    """Watermarked stream-stream join: right events within 10 minutes AFTER
+    the left event, same ``key``, both sides timed by ``ts``.
 
-    Both sides carry watermarks so the state store can discard rows older
-    than (watermark + within) — the condition that keeps a stream-stream
+    Both sides carry 30-minute watermarks so the state store can discard
+    rows older than (watermark + 10 minutes) — the condition that keeps a stream-stream
     join's state bounded on an unbounded stream. Columns come back
     prefixed l_/r_.
     """
-    l = left.withWatermark(left_ts, watermark).select(
+    l = left.withWatermark("ts", "30 minutes").select(
         F.col(key).alias("l_key"),
-        F.col(left_ts).alias("l_ts"),
-        *[F.col(c).alias(f"l_{c}") for c in left.columns if c not in (key, left_ts)],
+        F.col("ts").alias("l_ts"),
+        *[F.col(c).alias(f"l_{c}") for c in left.columns if c not in (key, "ts")],
     )
-    r = right.withWatermark(right_ts, watermark).select(
+    r = right.withWatermark("ts", "30 minutes").select(
         F.col(key).alias("r_key"),
-        F.col(right_ts).alias("r_ts"),
-        *[F.col(c).alias(f"r_{c}") for c in right.columns if c not in (key, right_ts)],
+        F.col("ts").alias("r_ts"),
+        *[F.col(c).alias(f"r_{c}") for c in right.columns if c not in (key, "ts")],
     )
     cond = (
         (F.col("l_key") == F.col("r_key"))
         & (F.col("r_ts") >= F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {within}"))
+        & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 10 minutes"))
     )
     return l.join(r, cond).drop("r_key")
 
 
-def streaming_exact_dedup(
-    docs: DataFrame, watermark: str = "1 hour", text_col: str = "text"
-) -> DataFrame:
+def streaming_exact_dedup(docs: DataFrame) -> DataFrame:
     """Streaming exact dedup: first-seen copy of each content hash wins.
 
-    ``dropDuplicates`` on the md5 content hash with a watermark bound on
+    ``dropDuplicates`` on the md5 content hash with a 1-hour watermark bound on
     the state store — the streaming twin of operators/dedup.exact dedup
     (same hash, same keep-first semantics per micro-batch arrival order).
     Without the watermark the hash->seen state grows forever; with it,
@@ -104,9 +94,9 @@ def streaming_exact_dedup(
     anti-join (operators/dedup.incremental_dedup) over the persisted
     hash index.
     """
-    hashed = docs.withColumn("content_hash", F.md5(F.col(text_col)))
+    hashed = docs.withColumn("content_hash", F.md5(F.col("text")))
     if "ts" in docs.columns:
-        hashed = hashed.withWatermark("ts", watermark)
+        hashed = hashed.withWatermark("ts", "1 hour")
         return hashed.dropDuplicates(["content_hash"])
     return hashed.dropDuplicates(["content_hash"])
 
@@ -115,8 +105,6 @@ def late_event_audit(
     events: DataFrame,
     delay_seconds: int = 600,
     order_col: str = "event_id",
-    ts_col: str = "ts",
-    num_partitions: int = 32,
 ) -> DataFrame:
     """What-if audit of a streaming watermark policy over a recorded log:
     which events WOULD the engine have dropped as too late?
@@ -138,13 +126,11 @@ def late_event_audit(
     from odbc2parquet_spark.operators.bucketing import order_bucket_col
 
     spark = events.sparkSession
-    sec = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    sec = F.unix_micros(F.col("ts").cast("timestamp"))
     base = events.select(
         F.col(order_col).alias("_oid_"), sec.alias("_us_"), "event_type"
     )
-    with_pid = base.withColumn(
-        "_pid_", order_bucket_col(base, "_oid_", num_partitions)
-    )
+    with_pid = base.withColumn("_pid_", order_bucket_col(base, "_oid_", 32))
     pmax = {
         r._pid_: r.m
         for r in with_pid.groupBy("_pid_").agg(F.max("_us_").alias("m")).collect()

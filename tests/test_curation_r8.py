@@ -134,7 +134,7 @@ def test_audio_frame_energy_totals_match_sample_decode(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents").limit(20)
     wav = M.encode_wav(docs)
-    frames = M.decode_audio_frame_energy(wav, frame_len=64)
+    frames = M.decode_audio_frame_energy(wav)
     totals = frames.groupBy("doc_id").agg(
         F.sum("sum_sq").alias("ss"), F.sum("n").alias("n")
     )
@@ -257,8 +257,7 @@ def test_nprobe_curve_equals_independent_searches(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 5)
     curve = ivf_pq_nprobe_curve(
-        emb, probes, nprobes=(1, 2, 4), k_cells=8, m=8, k_centroids=8,
-        dim=64, top_k=5,
+        emb, probes, nprobes=(1, 2, 4), k_cells=8, k_centroids=8, top_k=5,
     ).collect()
     got = {
         p: sorted(
@@ -272,8 +271,7 @@ def test_nprobe_curve_equals_independent_searches(spark, sf_dir):
         ref = sorted(
             (r.query_id, r.neighbor_id, r.adc4, r.rank)
             for r in ivf_pq_search(
-                emb, probes, nprobe=p, k_cells=8, m=8, k_centroids=8,
-                dim=64, top_k=5,
+                emb, probes, nprobe=p, k_cells=8, k_centroids=8, top_k=5,
             ).collect()
         )
         assert got[p] == ref, p

@@ -114,7 +114,7 @@ def test_chi_square_missing_cell_counts_expectation(spark):
 def test_psi_identical_populations_near_zero(spark):
     rows = [(float(v % 37), v % 2 == 0) for v in range(1000)]
     df = spark.createDataFrame(rows, ["v", "b"])
-    out = psi_drift(df, "v", F.col("b"), n_bins=10).collect()
+    out = psi_drift(df, "v", F.col("b")).collect()
     assert len(out) == 10
     assert sum(abs(r.psi_term) for r in out) < 0.01
 
@@ -124,7 +124,7 @@ def test_psi_shifted_population_detects_drift(spark):
         (float(v % 50) + 40.0, True) for v in range(1000)
     ]
     df = spark.createDataFrame(rows, ["v", "b"])
-    out = psi_drift(df, "v", F.col("b"), n_bins=10).collect()
+    out = psi_drift(df, "v", F.col("b")).collect()
     assert sum(r.psi_term for r in out) > 0.5  # "significant drift" band
     # every bin emits a row even if one side is empty there
     assert {r.bin for r in out} == set(range(10))
@@ -211,7 +211,7 @@ def test_psi_constant_column_collapses_to_bin0(spark):
     smoothed-empty terms, and counts reconcile with the totals."""
     rows = [(7.0, v % 2 == 0) for v in range(100)]
     df = spark.createDataFrame(rows, ["v", "b"])
-    out = {r.bin: r for r in psi_drift(df, "v", F.col("b"), n_bins=10).collect()}
+    out = {r.bin: r for r in psi_drift(df, "v", F.col("b")).collect()}
     assert set(out) == set(range(10))
     assert out[0].n_a == 50 and out[0].n_b == 50
     assert all(out[b].n_a == 0 and out[b].n_b == 0 for b in range(1, 10))
@@ -404,7 +404,7 @@ def test_seasonal_decompose_rejects_even_period(spark):
         [(d, float(d)) for d in range(30)], "day long, v double"
     ).select("day", F.col("v").cast("decimal(18,6)").alias("val_dec"))
     with pytest.raises(ValueError, match="odd"):
-        seasonal_decompose(daily, "day", "val_dec", period=12)
+        seasonal_decompose(daily, period=12)
 
 
 def test_bucketing_date_keys(spark):

@@ -42,7 +42,7 @@ def test_lsh_bucket_pairs_occupancy_path_matches_explicit(spark):
     sig = spark.range(300).select(
         F.col("id").alias("vec_id"), (F.col("id") * 37 % 97).alias("sig")
     )
-    bits = derived_prefix_bits(300, target_occupancy=64)
+    bits = derived_prefix_bits(300)
     assert bits == 4
     auto = lsh_bucket_pairs(sig, target_occupancy=64, n_vectors=300)
     explicit = lsh_bucket_pairs(sig, prefix_bits=bits)
@@ -74,7 +74,7 @@ def test_simhash_width_generalizes_past_32_bits(spark):
         [(1, "alpha beta gamma"), (2, "alpha beta gamma"), (3, "delta")],
         ["doc_id", "text"],
     )
-    s32 = {r.id: r.simhash for r in simhash(docs, bits=32).collect()}
+    s32 = {r.id: r.simhash for r in simhash(docs).collect()}
     s60 = {r.id: r.simhash for r in simhash(docs, bits=60).collect()}
     # identical docs agree at every width; distinct docs differ
     assert s32[1] == s32[2] and s60[1] == s60[2]

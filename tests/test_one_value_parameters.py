@@ -1,0 +1,129 @@
+"""Every defaulted parameter of a query-side function is a value some caller sets.
+
+An AST walk, no Spark. A parameter whose every caller passes the default,
+or nothing, only ever takes one value; it is a constant spelled as a knob,
+so it belongs in the body as its literal. The scope is the top-level
+functions of ``operators/``, ``streaming/`` and ``queries/`` (a nested
+function's defaults bind closure values, not options). Callers are every
+call in the package, ``tests/``, ``tools/``, ``bench.py``,
+``__spark_entry__.py`` and ``xferbench/``, resolved by name to every
+in-scope function of that name. A call sets a parameter when it passes
+an expression other than the default, positionally or by keyword, or
+when it forwards ``*args``/``**kwargs``. Passing the caller's own
+defaulted parameter of the same default only sets the parameter if that
+one is set in turn (a fixpoint), so a knob relayed through a chain of
+knobs is still one knob.
+
+Tests count as callers for now: a value that a test sets pins a
+behaviour, and whether that behaviour should go is a separate decision
+for each test. The transfer path (``sinks/``, ``sources/``,
+``mappings.py``, ``__main__.py``) and ``session.py`` are out of scope:
+their options have their own guard
+(``test_every_query_option_is_set_by_the_cli_and_read``), and their
+``env``/``argv``/``master`` parameters are test-substitution and
+deployment points.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
+PACKAGE = REPO / "odbc2parquet_spark"
+SCOPE = [PACKAGE / "operators", PACKAGE / "streaming", PACKAGE / "queries"]
+CALLERS = [PACKAGE, REPO / "tests", REPO / "tools", REPO / "bench.py", REPO / "__spark_entry__.py", REPO / "xferbench"]
+FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _py_files():
+    for root in CALLERS:
+        yield from [root] if root.is_file() else sorted(root.rglob("*.py"))
+
+
+def _defaults(fn) -> dict[str, ast.expr]:
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    out = {p.arg: d for p, d in zip(pos[len(pos) - len(a.defaults):], a.defaults)}
+    out.update({p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None})
+    return out
+
+
+def _params(fn) -> list[str]:
+    a = fn.args
+    return [p.arg for p in a.posonlyargs + a.args + a.kwonlyargs]
+
+
+def one_value() -> list[tuple[str, str, str]]:
+    """(module path relative to the package, function, parameter) of every
+    in-scope defaulted parameter that no caller sets."""
+    defs: dict[tuple[str, str], ast.AST] = {}
+    by_name: dict[str, list[tuple[str, str]]] = {}
+    trees = {path: ast.parse(path.read_text(), str(path)) for path in _py_files()}
+    for path, tree in trees.items():
+        if any(s in path.parents for s in SCOPE):
+            module = path.relative_to(PACKAGE).as_posix()
+            for stmt in tree.body:
+                if isinstance(stmt, FUNCS):
+                    defs[(module, stmt.name)] = stmt
+                    by_name.setdefault(stmt.name, []).append((module, stmt.name))
+    defaults = {key: _defaults(fn) for key, fn in defs.items()}
+    key_of = {id(fn): key for key, fn in defs.items()}
+
+    set_: set[tuple[tuple[str, str], str]] = set()
+    relays: list[tuple[tuple[tuple[str, str], str], tuple[tuple[str, str], str]]] = []
+
+    def relayed_from(name: ast.Name, scopes: list, default: ast.expr):
+        """The enclosing in-scope parameter ``name`` reads, when it has the same default."""
+        for fn in reversed(scopes):
+            if name.id in _params(fn):
+                key = key_of.get(id(fn))
+                d = defaults[key].get(name.id) if key else None
+                return (key, name.id) if d is not None and ast.dump(d) == ast.dump(default) else None
+        return None
+
+    def visit(node, scopes):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (*FUNCS, ast.Lambda)):
+                visit(child, scopes + [child])
+                continue
+            if isinstance(child, ast.Call):
+                f = child.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                for key in by_name.get(name, ()):
+                    dflt = defaults[key]
+                    if any(isinstance(a, ast.Starred) for a in child.args) or any(
+                        k.arg is None for k in child.keywords
+                    ):
+                        set_.update((key, p) for p in dflt)
+                        continue
+                    a = defs[key].args
+                    pos = [p.arg for p in a.posonlyargs + a.args]
+                    binds = list(zip(pos, child.args)) + [(k.arg, k.value) for k in child.keywords]
+                    for p, expr in binds:
+                        if p not in dflt or ast.dump(expr) == ast.dump(dflt[p]):
+                            continue
+                        src = relayed_from(expr, scopes, dflt[p]) if isinstance(expr, ast.Name) else None
+                        if src:
+                            relays.append(((key, p), src))
+                        else:
+                            set_.add((key, p))
+            visit(child, scopes)
+
+    for tree in trees.values():
+        visit(tree, [])
+    grew = True
+    while grew:
+        grew = False
+        for target, src in relays:
+            if src in set_ and target not in set_:
+                set_.add(target)
+                grew = True
+    return sorted((m, f, p) for (m, f), dflt in defaults.items() for p in dflt if ((m, f), p) not in set_)
+
+
+def test_every_defaulted_parameter_is_set_by_some_caller():
+    found = one_value()
+    assert not found, "only ever the default, fold into the body: " + ", ".join(
+        f"{m}:{f}({p})" for m, f, p in found
+    )

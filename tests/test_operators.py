@@ -31,14 +31,14 @@ def test_exact_duplicates(docs):
 
 
 def test_word_shingles(docs):
-    sh = D.word_shingles(docs.filter("doc_id = 5"), 3).collect()
+    sh = D.word_shingles(docs.filter("doc_id = 5")).collect()
     assert sh == []  # fewer words than shingle width -> no shingles
-    sh1 = {r.g for r in D.word_shingles(docs.filter("doc_id = 1"), 3).collect()}
+    sh1 = {r.g for r in D.word_shingles(docs.filter("doc_id = 1")).collect()}
     assert "the quick brown" in sh1 and len(sh1) == 7
 
 
 def test_jaccard_pairs_finds_near_dup(docs):
-    pairs = D.jaccard_pairs(D.word_shingles(docs, 3), threshold=0.5).collect()
+    pairs = D.jaccard_pairs(D.word_shingles(docs), threshold=0.5).collect()
     got = {(r.id_a, r.id_b) for r in pairs}
     assert (1, 2) in got  # identical
     assert (1, 3) in got and (2, 3) in got  # near dup (6/8 shingles shared)
@@ -46,7 +46,7 @@ def test_jaccard_pairs_finds_near_dup(docs):
 
 
 def test_minhash_lsh_pipeline(docs):
-    out = D.minhash_near_duplicates(docs, threshold=0.5)
+    out = D.minhash_near_duplicates(docs)
     got = {(r.id_a, r.id_b) for r in out.collect()}
     assert (1, 2) in got  # identical docs always collide in every band
     assert all(4 not in p for p in got)
@@ -79,7 +79,7 @@ def test_brute_force_topk_self_similarity(spark):
 def test_lsh_signature_deterministic(spark):
     rows = [(1, [0.5] * 64), (2, [0.5] * 64), (3, [-0.5] * 64)]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    sig = {r.vec_id: r.sig for r in S.lsh_signatures(emb, 16, 64).collect()}
+    sig = {r.vec_id: r.sig for r in S.lsh_signatures(emb).collect()}
     assert sig[1] == sig[2]  # identical vectors -> identical signature
     assert sig[1] != sig[3]  # opposite vector flips every plane's sign
     assert sig[1] ^ sig[3] == (1 << 16) - 1
@@ -126,7 +126,7 @@ def test_multimodal_decode_plumbing(docs):
 
 
 def test_frame_sample_short_payload_empty(docs):
-    frames = M.frame_sample(M.attach_binary(docs.filter("doc_id = 5")), 97).collect()
+    frames = M.frame_sample(M.attach_binary(docs.filter("doc_id = 5"))).collect()
     assert frames == []
 
 
@@ -134,8 +134,8 @@ def test_frame_sample_short_payload_empty(docs):
 def test_simhash_banded_matches_all_pairs(docs):
     """Pigeonhole guarantee: bands > max_hamming -> banded == all-pairs."""
     sig = D.simhash(docs)
-    allp = {(r.id_a, r.id_b, r.hamming) for r in D.simhash_near_pairs(sig, 6).collect()}
-    band = {(r.id_a, r.id_b, r.hamming) for r in D.simhash_banded_pairs(sig, 6, 32, 8).collect()}
+    allp = {(r.id_a, r.id_b, r.hamming) for r in D.simhash_near_pairs(sig).collect()}
+    band = {(r.id_a, r.id_b, r.hamming) for r in D.simhash_banded_pairs(sig).collect()}
     assert band == allp
 
 
@@ -155,7 +155,7 @@ def test_simhash_banded_production_spec_zero_recall_loss(docs):
     }
     banded = {
         (r.id_a, r.id_b, r.hamming)
-        for r in D.simhash_banded_pairs(sig, max_hamming=3, bits=32, bands=4).collect()
+        for r in D.simhash_banded_pairs(sig, max_hamming=3, bands=4).collect()
     }
     assert banded == truth
     assert truth, "degenerate corpus: the recall proof proved nothing"
@@ -163,7 +163,7 @@ def test_simhash_banded_production_spec_zero_recall_loss(docs):
 
 def test_simhash_banded_rejects_too_few_bands(docs):
     with pytest.raises(ValueError):
-        D.simhash_banded_pairs(D.simhash(docs), max_hamming=8, bands=8)
+        D.simhash_banded_pairs(D.simhash(docs), max_hamming=8)
 
 
 def test_ivf_assign_picks_nearest_centroid(spark):
@@ -201,13 +201,13 @@ def test_ivf_refine_centroids_moves_to_mean(spark):
     seed = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [0.0, 1.0])], ["centroid_id", "centroid"]
     )
-    ref = {r.centroid_id: r.centroid for r in S.ivf_refine_centroids(vecs, seed, 1).collect()}
+    ref = {r.centroid_id: r.centroid for r in S.ivf_refine_centroids(vecs, seed).collect()}
     assert ref[0] == pytest.approx([0.9, 0.1], abs=1e-6)
     assert ref[1] == pytest.approx([0.1, 0.9], abs=1e-6)
 
 
 def test_resize_images_binary_roundtrip(docs):
-    out = M.resize_images(M.attach_binary(docs), 4, 3, 3).collect()
+    out = M.resize_images(M.attach_binary(docs), 4, 3).collect()
     assert all(len(bytes(r.resized)) == 36 for r in out)
     by_id = {r.doc_id: r for r in out}
     src = {r.doc_id: r.text.encode() for r in docs.collect()}
@@ -330,10 +330,10 @@ def test_kmv_estimate_accuracy(spark):
     from odbc2parquet_spark.operators.sketches import heavy_hitters, kmv_distinct_estimate
 
     df = spark.range(0, 20000).selectExpr("id % 5000 as v")  # 5000 distinct
-    est = kmv_distinct_estimate(df, "v", k=256).first()
+    est = kmv_distinct_estimate(df, "v").first()
     assert est.k_used == 256
     assert abs(est.estimate - 5000) / 5000 < 0.15  # ~1/sqrt(k) error regime
-    small = kmv_distinct_estimate(spark.range(0, 100).selectExpr("id as v"), "v", k=256).first()
+    small = kmv_distinct_estimate(spark.range(0, 100).selectExpr("id as v"), "v").first()
     assert small.estimate == 100.0  # exact below k
     hh = heavy_hitters(
         spark.createDataFrame([("a",)] * 5 + [("b",)] * 3 + [("c",)] * 3, ["v"]), "v", 2
@@ -348,13 +348,13 @@ def test_ann_recall_vs_bruteforce(spark):
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     probes = emb.filter("vec_id < 10")
-    exact = S.brute_force_topk(emb, probes, k=10).collect()
+    exact = S.brute_force_topk(emb, probes).collect()
     truth = {}
     for r in exact:
         truth.setdefault(r.query_id, set()).add(r.neighbor_id)
 
-    cent = S.ivf_seed_centroids(emb, 16)
-    approx = S.ivf_search(emb, probes, cent, nprobe=4, k=10).collect()
+    cent = S.ivf_seed_centroids(emb)
+    approx = S.ivf_search(emb, probes, cent).collect()
     got = {}
     for r in approx:
         got.setdefault(r.query_id, set()).add(r.neighbor_id)
@@ -641,7 +641,7 @@ def test_incremental_minhash_dedup_gates_near_dups(spark):
 def test_wav_header_roundtrip_and_rejects():
     from odbc2parquet_spark.operators.multimodal import parse_wav_header, synth_wav
 
-    w = synth_wav(b"abc", 44100, 1, 1000, bits=16)
+    w = synth_wav(b"abc", 44100, 1, 1000)
     assert parse_wav_header(w) == ("wav", 44100, 1, 16, 1000, 22)
     # extra chunk before data: the walk must skip it
     extra = w[:12] + b"LIST" + (4).to_bytes(4, "little") + b"INFO" + w[12:]
@@ -672,7 +672,7 @@ def test_resample_forward_fill_gaps(spark):
     ]
     ev = spark.createDataFrame(rows, ["event_id", "user_id", "ts", "value"])
     out = {(r.user_id, r.bucket): (r.filled_value, r.observed)
-           for r in resample_forward_fill(ev, 86400).collect()}
+           for r in resample_forward_fill(ev).collect()}
     days = sorted(b for (u, b) in out if u == 7)
     assert len(days) == 3                       # contiguous grid incl. the gap
     d0, d1, d2 = days
@@ -788,9 +788,9 @@ def test_count_min_sketch_never_undercounts(spark):
 
     rows = [(w,) for w in ["a"] * 50 + ["b"] * 7 + ["c"] * 1]
     df = spark.createDataFrame(rows, ["w"])
-    sk = count_min_sketch(df, "w", depth=4, width=8)  # tiny width forces collisions
+    sk = count_min_sketch(df, "w", width=8)  # tiny width forces collisions
     probes = spark.createDataFrame([("a",), ("b",), ("c",), ("zzz",)], ["value"])
-    est = {r.value: r.est for r in cms_estimate(sk, probes, depth=4, width=8).collect()}
+    est = {r.value: r.est for r in cms_estimate(sk, probes, width=8).collect()}
     assert est["a"] >= 50 and est["b"] >= 7 and est["c"] >= 1  # CMS never undercounts
     assert est["a"] <= 58                                       # bounded by stream size
     assert est["zzz"] >= 0                                      # absent key: collision noise only
@@ -866,7 +866,7 @@ def test_pagerank_int_mass_and_ordering(spark):
     edges = spark.createDataFrame(
         [(0, 1), (1, 0), (0, 2), (2, 0), (0, 3), (3, 0)], ["src", "dst"]
     )
-    ranks = pagerank_int(nodes, out_degree_weighted(edges), iterations=3)
+    ranks = pagerank_int(nodes, out_degree_weighted(edges))
     got = {r["id"]: r["rank"] for r in ranks.collect()}
     # the hub must outrank every leaf; leaves are symmetric -> equal ranks
     assert got[0] > got[1]
@@ -892,7 +892,7 @@ def test_personalized_pagerank_frontier_and_floor(spark):
     got = {
         r["id"]: r["rank"]
         for r in personalized_pagerank_int(
-            out_degree_weighted(edges), seeds, iterations=3
+            out_degree_weighted(edges), seeds
         ).collect()
     }
     base = 10**12
@@ -906,6 +906,14 @@ def test_personalized_pagerank_frontier_and_floor(spark):
     assert got[0] >= (15 * base) // 100
     # total mass never exceeds the injected unit (division floors leak)
     assert sum(got.values()) <= base
+    # a repeated seed id is one seed: the teleport base divides by the
+    # distinct seeds, so the walk is the single-seed walk
+    twice = spark.createDataFrame([(0,), (0,)], ["id"])
+    got_twice = {
+        r["id"]: r["rank"]
+        for r in personalized_pagerank_int(out_degree_weighted(edges), twice).collect()
+    }
+    assert got_twice == got
 
 
 def test_neg_sample_table_exact_apportionment(spark):
@@ -1020,7 +1028,7 @@ def test_epoch_shuffle_is_per_epoch_permutation(spark):
     from odbc2parquet_spark.operators.sharding import epoch_shuffle
 
     docs = spark.createDataFrame([(i,) for i in range(100)], ["doc_id"])
-    out = epoch_shuffle(docs, n_epochs=2, n_shards=4).collect()
+    out = epoch_shuffle(docs, n_shards=4).collect()
     by_epoch = {}
     for r in out:
         by_epoch.setdefault(r["epoch"], []).append(r)
@@ -1064,7 +1072,7 @@ def test_binned_quantiles_within_bin_width(spark):
 
     vals = [i / 100.0 for i in range(1, 101)]  # 0.01 .. 1.00
     df = spark.createDataFrame([("a", v) for v in vals], ["g", "v"])
-    row = binned_quantiles(df, ["g"], "v", quantiles=(0.5, 0.95), bin_width=0.01).collect()[0]
+    row = binned_quantiles(df, ["g"], "v", quantiles=(0.5, 0.95)).collect()[0]
     assert row["n"] == 100
     # true p50 = 0.50, p95 = 0.95; estimate within one bin width
     assert abs(row["p50"] - 0.50) <= 0.01 + 1e-9
@@ -1078,7 +1086,7 @@ def test_multiprobe_superset_of_single_bucket(spark):
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
     sig = S.lsh_signatures(emb, 8, 8)
     single = {(r.id_a, r.id_b) for r in S.lsh_bucket_pairs(sig, prefix_bits=4).collect()}
-    multi = {(r.id_a, r.id_b) for r in S.lsh_multiprobe_pairs(sig, prefix_bits=4, probes=2).collect()}
+    multi = {(r.id_a, r.id_b) for r in S.lsh_multiprobe_pairs(sig, prefix_bits=4).collect()}
     assert single <= multi          # probing can only ADD candidates
     assert len(multi) >= len(single)
 
@@ -1086,8 +1094,8 @@ def test_multiprobe_superset_of_single_bucket(spark):
 def test_banded_pairs_catch_identical_signatures(spark):
     rows = [(1, [0.5] * 64), (2, [0.5] * 64), (3, [-0.5] * 64), (4, [-0.5] * 64)]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    sig = S.lsh_signatures(emb, 16, 64)
-    got = {(r.id_a, r.id_b) for r in S.lsh_banded_pairs(sig, 4, 4).collect()}
+    sig = S.lsh_signatures(emb)
+    got = {(r.id_a, r.id_b) for r in S.lsh_banded_pairs(sig).collect()}
     # identical vectors share every band; opposite signatures share none
     assert (1, 2) in got and (3, 4) in got
     assert (1, 3) not in got and (2, 4) not in got
@@ -1155,10 +1163,10 @@ def test_lsh_bucket_cap_drops_hot_bucket_only(spark):
     )
     pairs = {
         (r.id_a, r.id_b)
-        for r in lsh_bucket_pairs(sig, prefix_bits=8, max_bucket=3).collect()
+        for r in lsh_bucket_pairs(sig, max_bucket=3).collect()
     }
     assert pairs == {(10, 11)}  # hot bucket contributes nothing
-    uncapped = lsh_bucket_pairs(sig, prefix_bits=8, max_bucket=100).collect()
+    uncapped = lsh_bucket_pairs(sig, max_bucket=100).collect()
     assert len(uncapped) == 6 + 1  # C(4,2) + C(2,2)
 
 
@@ -1175,7 +1183,7 @@ def test_minhash_band_cap_drops_hot_band_bucket_only(spark):
     )
     pairs = {
         (r.id_a, r.id_b)
-        for r in lsh_candidate_pairs(sig, bands=4, rows_per_band=2, max_bucket=3).collect()
+        for r in lsh_candidate_pairs(sig, max_bucket=3).collect()
     }
     assert pairs == {(10, 11)}
 
@@ -1271,12 +1279,12 @@ def test_candidate_cap_matches_bruteforce(spark, operator):
         }
         if operator == "simhash_banded":
             sig = spark.createDataFrame(list(sigs.items()), "id long, simhash long")
-            out = D.simhash_banded_pairs(sig, max_hamming=3, bits=32, bands=4, max_bucket=3)
+            out = D.simhash_banded_pairs(sig, max_hamming=3, bands=4, max_bucket=3)
             args = (4, 8, 3)
         else:
             sigs[8] = None
             hashes = spark.createDataFrame(list(sigs.items()), "doc_id long, dhash long")
-            out = M.dhash_near_pairs(hashes, bands=4, band_bits=14, max_hamming=6, max_bucket=3)
+            out = M.dhash_near_pairs(hashes, max_bucket=3)
             args = (4, 14, 6)
         got = {(r.id_a, r.id_b, r.hamming) for r in out.collect()}
         want = _banded_reference(sigs, *args, max_bucket=3)
@@ -1423,7 +1431,7 @@ def test_mp4_sample_table_roundtrip_and_bounds(spark):
     df = spark.createDataFrame(
         [(1, bytearray(p)), (2, bytearray(b"AAAAAAAA"))], ["doc_id", "payload"]
     )
-    rows = {(r.doc_id, r.sample_idx) for r in video_frame_index(df, 3).collect()}
+    rows = {(r.doc_id, r.sample_idx) for r in video_frame_index(df).collect()}
     assert rows == {(1, 0), (1, 3), (1, 6), (2, None)}
 
 
@@ -1444,7 +1452,7 @@ def test_mp4_stsz_count_past_its_box_raises_before_listing(spark):
     with pytest.raises(ValueError, match="stsz sample count"):
         parse_mp4_samples(bytes(p))
     df = spark.createDataFrame([(7, p)], ["doc_id", "payload"])
-    assert [(r.doc_id, r.sample_idx) for r in video_frame_index(df, 3).collect()] == [(7, None)]
+    assert [(r.doc_id, r.sample_idx) for r in video_frame_index(df).collect()] == [(7, None)]
 
 
 def test_span_scrub_removes_later_occurrences_only(spark):
@@ -1462,7 +1470,7 @@ def test_span_scrub_removes_later_occurrences_only(spark):
         ],
         ["doc_id", "text"],
     )
-    rows = {r.doc_id: r for r in span_scrub(docs, n=5).collect()}
+    rows = {r.doc_id: r for r in span_scrub(docs).collect()}
     assert rows[1].n_removed == 0 and rows[1].n_tokens == 7
     assert rows[2].n_removed == 5 and rows[2].n_tokens == 8
     assert rows[3].n_removed == 0 and rows[3].n_tokens == 3
@@ -1482,7 +1490,7 @@ def test_span_scrub_overlapping_spans_union_positions(spark):
         [(1, base + " z"), (2, "q " + base)],
         ["doc_id", "text"],
     )
-    rows = {r.doc_id: r for r in span_scrub(docs, n=5).collect()}
+    rows = {r.doc_id: r for r in span_scrub(docs).collect()}
     assert rows[1].n_removed == 0
     assert rows[2].n_removed == 6 and rows[2].n_tokens == 7
 
@@ -1647,7 +1655,7 @@ def test_mmr_prefers_diverse_over_redundant(spark):
         (3, [0.6, 0.0, 0.8]),     # less relevant, orthogonal-ish
     ]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out = mmr_rerank(emb, emb.filter("vec_id = 0"), k_cand=3, k_sel=2, lam=0.5)
+    out = mmr_rerank(emb, emb.filter("vec_id = 0"), k_cand=3, k_sel=2)
     got = {r.step: r.vec_id for r in out.collect()}
     assert got[1] == 1          # pure relevance, min-id tiebreak over the dup
     assert got[2] == 3          # diversity beats the redundant duplicate
@@ -1781,7 +1789,7 @@ def test_group_split_never_straddles_duplicate_pairs(spark, sf_dir):
 
     split = QUERIES["dd_group_split"](spark, sf_dir).select("doc_id", "split")
     docs = load_table(spark, sf_dir, "documents")
-    pairs = D.minhash_near_duplicates(docs, threshold=0.5).select("id_a", "id_b")
+    pairs = D.minhash_near_duplicates(docs).select("id_a", "id_b")
     a = split.withColumnsRenamed({"doc_id": "id_a", "split": "sa"})
     b = split.withColumnsRenamed({"doc_id": "id_b", "split": "sb"})
     leaks = pairs.join(a, "id_a").join(b, "id_b").filter("sa != sb").count()
@@ -1833,7 +1841,7 @@ def test_hash_embed_long_doc_cross_engine_hash(spark):
     got = {
         r.doc_id: (r.nnz, r.vec_hash)
         for r in hash_embed(
-            spark.createDataFrame(data, ["doc_id", "text"]), dim=16
+            spark.createDataFrame(data, ["doc_id", "text"])
         ).collect()
     }
     con = duckdb.connect()
@@ -2003,14 +2011,14 @@ def test_pps_sample_exact_k_and_proportionality(spark):
 
     rows = [(i, 10) for i in range(100)] + [(1000, 1000)]  # heavy item
     df = spark.createDataFrame(rows, ["doc_id", "w"])
-    out = pps_sample(df, "w", k=40, id_col="doc_id").collect()
+    out = pps_sample(df, "w", k=40).collect()
     assert sum(r.n_hits for r in out) == 40
     heavy = {r.doc_id: r.n_hits for r in out}.get(1000, 0)
     assert 15 <= heavy <= 25  # expected 20 = k * 1000/2000
     assert all(r.n_hits >= 1 for r in out)
 
     zero = spark.createDataFrame([(1, 0), (2, 5)], ["doc_id", "w"])
-    z = pps_sample(zero, "w", k=3, id_col="doc_id").collect()
+    z = pps_sample(zero, "w", k=3).collect()
     assert {r.doc_id for r in z} == {2} and z[0].n_hits == 3
 
 
@@ -2042,7 +2050,7 @@ def test_ewma_last_n_known_values(spark):
     )
     out = {
         (r.uid, r.seq): r.ewma
-        for r in ewma_last_n(df, "uid", ["seq"], "value", n=8).collect()
+        for r in ewma_last_n(df, "uid", ["seq"], "value").collect()
     }
     assert out[(1, 1)] == 1.0
     assert out[(1, 2)] == (2 * 128 + 1 * 64) / 192
@@ -2125,7 +2133,7 @@ def test_pq_refine_reduces_distortion(spark):
         "vec_id", F.col("embedding").cast("array<float>").alias("embedding")
     )
     cb0 = S.pq_codebook(vecs, m=2, k=4, dim=16)
-    cb1 = S.pq_refine_codebook(vecs, cb0, m=2, dim=16, iterations=1)
+    cb1 = S.pq_refine_codebook(vecs, cb0, m=2, dim=16)
 
     def distortion(cb):
         return (
@@ -2322,7 +2330,7 @@ def test_rolling_trend_known_slopes(spark):
     rows += [(2, i, 7.0) for i in range(5)]            # slope 0
     df = spark.createDataFrame(rows, ["uid", "seq", "value"])
     out = {(r.uid, r.seq): (r.n_window, r.slope) for r in
-           rolling_trend(df, "uid", ["seq"], "value", n=8).collect()}
+           rolling_trend(df, "uid", ["seq"], "value").collect()}
     assert (1, 0) not in out and (2, 0) not in out
     assert out[(1, 3)] == (4, 2.0)
     assert out[(1, 11)] == (8, 2.0)  # full window, still exact
@@ -2335,7 +2343,7 @@ def test_hll_estimate_accuracy_and_merge_invariance(spark):
     df = spark.range(0, 30000).selectExpr(
         "CAST(id % 3 AS STRING) AS g", "id % 4000 as v"
     )  # three groups, each covering <= 4000 distinct values
-    est = {r.g: r for r in hll_distinct_per_group(df, ["g"], "v", p=8).collect()}
+    est = {r.g: r for r in hll_distinct_per_group(df, ["g"], "v").collect()}
     for g in ("0", "1", "2"):
         exact = df.filter(f"g = '{g}'").select("v").distinct().count()
         rel = abs(est[g].estimate - exact) / exact
@@ -2343,14 +2351,14 @@ def test_hll_estimate_accuracy_and_merge_invariance(spark):
         assert est[g].m == 256
     # small-cardinality regime: linear counting branch engages and is tight
     small = hll_distinct_per_group(
-        spark.range(0, 40).selectExpr("'x' AS g", "id as v"), ["g"], "v", p=8
+        spark.range(0, 40).selectExpr("'x' AS g", "id as v"), ["g"], "v"
     ).first()
     assert abs(small.estimate - 40) / 40 < 0.10
     assert small.zero_regs > 0
     # partitioning invariance: registers merge by MAX, so the estimate
     # cannot depend on how rows were split
-    a = hll_distinct_per_group(df.repartition(64), ["g"], "v", p=8).collect()
-    b = hll_distinct_per_group(df.coalesce(1), ["g"], "v", p=8).collect()
+    a = hll_distinct_per_group(df.repartition(64), ["g"], "v").collect()
+    b = hll_distinct_per_group(df.coalesce(1), ["g"], "v").collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
@@ -2390,7 +2398,7 @@ def test_novelty_first_seen_semantics(spark):
         ],
         ["doc_id", "text"],
     )
-    out = {r.doc_id: r for r in novelty_scores(docs, n=2).collect()}
+    out = {r.doc_id: r for r in novelty_scores(docs).collect()}
     assert 4 not in out
     assert out[1].novelty == 1.0 and out[1].n_grams == 3
     assert out[2].novelty == 0.0
@@ -2429,7 +2437,7 @@ def test_prefix_jaccard_matches_all_pairs(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
         F.col("doc_id") < 300
     )
-    sh = word_shingles(docs, 3)
+    sh = word_shingles(docs)
     got = {
         (r.id_a, r.id_b)
         for r in prefix_jaccard_pairs(sh, threshold=0.5).collect()
@@ -2454,15 +2462,15 @@ def test_prefix_jaccard_bucket_cap_semantics(spark):
     sh = spark.createDataFrame(rows, "id long, g string")
     exact = {
         (r.id_a, r.id_b): r.jaccard
-        for r in prefix_jaccard_pairs(sh, threshold=0.8).collect()
+        for r in prefix_jaccard_pairs(sh).collect()
     }
     loose = {
         (r.id_a, r.id_b): r.jaccard
-        for r in prefix_jaccard_pairs(sh, threshold=0.8, bucket_cap=64).collect()
+        for r in prefix_jaccard_pairs(sh, bucket_cap=64).collect()
     }
     tight = {
         (r.id_a, r.id_b): r.jaccard
-        for r in prefix_jaccard_pairs(sh, threshold=0.8, bucket_cap=4).collect()
+        for r in prefix_jaccard_pairs(sh, bucket_cap=4).collect()
     }
     assert loose == exact and len(exact) > 100
     assert set(tight) < set(exact) and len(tight) > 0
@@ -2479,7 +2487,7 @@ def test_prefix_jaccard_exact_boundary_t08(spark):
 
     rows = [(1, f"g{i}") for i in range(28)] + [(2, f"g{i}") for i in range(35)]
     sh = spark.createDataFrame(rows, "id long, g string")
-    out = prefix_jaccard_pairs(sh, threshold=0.8).collect()
+    out = prefix_jaccard_pairs(sh).collect()
     assert [(r.id_a, r.id_b, r.n_inter, r.jaccard) for r in out] == [
         (1, 2, 28, 0.8)
     ]
@@ -2493,7 +2501,7 @@ def test_kmv_overlap_estimate_accuracy(spark):
 
     a = spark.range(0, 5000).selectExpr("id AS v")
     b = spark.range(2500, 7500).selectExpr("id AS v")
-    r = kmv_overlap_estimate(a, "v", b, "v", k=256).first()
+    r = kmv_overlap_estimate(a, "v", b, "v").first()
     assert r.k_used == 256
     assert abs(r.jaccard_est - 1 / 3) < 0.12
     assert abs(r.inter_est - 2500) / 2500 < 0.25
@@ -2502,7 +2510,6 @@ def test_kmv_overlap_estimate_accuracy(spark):
         "v",
         spark.range(25, 75).selectExpr("id AS v"),
         "v",
-        k=256,
     ).first()
     assert small.k_used == 75 and small.n_shared == 25
     assert small.inter_est == 25.0  # exact below k
@@ -2545,7 +2552,7 @@ def test_purged_time_split_embargo_gap(spark):
 
     rows = [(i * 1_000_000,) for i in range(10_000)]  # 10k seconds span
     df = spark.createDataFrame(rows, ["us"])
-    out = {r.split: r for r in purged_time_split(df, "us", 8, embargo_us=500_000_000).collect()}
+    out = {r.split: r for r in purged_time_split(df, "us", embargo_us=500_000_000).collect()}
     assert set(out) == {"train", "purged", "test"}
     assert out["train"].max_us < out["purged"].min_us <= out["purged"].max_us < out["test"].min_us
     assert out["test"].min_us - out["train"].max_us > 500_000_000
@@ -2569,10 +2576,10 @@ def test_hll_register_merge_equals_direct(spark):
     df = spark.range(0, 9000).selectExpr(
         "CAST(id % 3 AS STRING) AS fine", "'all' AS coarse", "id % 2000 AS v"
     )
-    direct = hll_distinct_per_group(df, ["coarse"], "v", p=8).first()
-    fine = hll_registers(df, ["coarse", "fine"], "v", p=8)
+    direct = hll_distinct_per_group(df, ["coarse"], "v").first()
+    fine = hll_registers(df, ["coarse", "fine"], "v")
     merged = fine.groupBy("coarse", "reg").agg(F.max("mrho").alias("mrho"))
-    via_merge = hll_estimate_from_registers(merged, ["coarse"], p=8).first()
+    via_merge = hll_estimate_from_registers(merged, ["coarse"]).first()
     assert via_merge.estimate == direct.estimate
     assert via_merge.zero_regs == direct.zero_regs
 
@@ -2621,15 +2628,15 @@ def test_kfold_assignment_properties(spark):
     df = spark.range(0, 5000).selectExpr(
         "id AS doc_id", "CAST(id % 4 AS STRING) AS lang"
     )
-    cert = kfold_assign(df, "doc_id", n_folds=5, strata_col="lang").collect()
+    cert = kfold_assign(df, "doc_id", strata_col="lang").collect()
     assert sum(r.n_rows for r in cert) == 5000
     assert {r.fold for r in cert} == set(range(5))
     per_fold = {}
     for r in cert:
         per_fold[r.fold] = per_fold.get(r.fold, 0) + r.n_rows
     assert all(abs(c - 1000) < 150 for c in per_fold.values())  # ~4 sigma
-    a = sorted(map(tuple, kfold_assign(df.repartition(32), "doc_id", 5, "lang").collect()))
-    b = sorted(map(tuple, kfold_assign(df.coalesce(1), "doc_id", 5, "lang").collect()))
+    a = sorted(map(tuple, kfold_assign(df.repartition(32), "doc_id", "lang").collect()))
+    b = sorted(map(tuple, kfold_assign(df.coalesce(1), "doc_id", "lang").collect()))
     assert a == b
 
 
@@ -2648,7 +2655,7 @@ def test_hll_cumulative_carries_untouched_registers(spark):
 
     rows = [(1, v) for v in range(200)] + [(2, v) for v in range(190, 210)]
     df = spark.createDataFrame(rows, ["day", "v"])
-    regs = hll_registers(df, ["day"], "v", p=8)
+    regs = hll_registers(df, ["day"], "v")
     days = regs.select("day").distinct()
     grid = days.crossJoin(F.broadcast(
         spark.range(256).select(F.col("id").cast("long").alias("reg"))
@@ -2661,11 +2668,11 @@ def test_hll_cumulative_carries_untouched_registers(spark):
         .select("day", "reg", F.max("mrho").over(w).alias("mrho"))
         .filter(F.col("mrho").isNotNull())
     )
-    cum = {r.day: r.estimate for r in hll_estimate_from_registers(run, ["day"], p=8).collect()}
+    cum = {r.day: r.estimate for r in hll_estimate_from_registers(run, ["day"]).collect()}
     # day-2 cumulative must equal sketching the union directly (210 ids),
     # NOT the 20-id day-2 slice
     union_direct = hll_distinct_per_group(
-        df.select(F.lit(2).alias("day"), "v"), ["day"], "v", p=8
+        df.select(F.lit(2).alias("day"), "v"), ["day"], "v"
     ).first()
     assert cum[2] == union_direct.estimate
     assert cum[2] > cum[1] * 0.9 and cum[2] >= cum[1]
@@ -2701,7 +2708,7 @@ def test_holt_forecast_matches_python_recursion(spark):
     df = spark.createDataFrame(
         [("a", d, x) for d, x in enumerate(xs)], ["key", "day", "x"]
     ).repartition(4)
-    got = holt_forecast(df, "key", "day", "x", horizons=(1, 7)).first()
+    got = holt_forecast(df).first()
     l, b = xs[0], 0.0
     for x in xs[1:]:
         l_new = (x + (l + b)) / 2.0
@@ -2803,7 +2810,7 @@ def test_suffix_lcp_spans_saturates_at_k_max(spark):
     docs = spark.createDataFrame(
         [(1, "x " + shared), (2, shared + " y")], ["doc_id", "text"]
     )
-    got = {r.doc_id: r.max_dup_span for r in D.suffix_lcp_spans(docs, k_max=16).collect()}
+    got = {r.doc_id: r.max_dup_span for r in D.suffix_lcp_spans(docs).collect()}
     # the true shared span is 25 tokens; bounded comparison reports k_max
     assert got == {1: 16, 2: 16}
 
@@ -2824,7 +2831,7 @@ def test_lsh_candidate_pairs_multi_equals_per_config_union(spark):
         for i in range(40)
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    sig = minhash_signatures(word_shingle_stream(docs, 3), num_hashes=8)
+    sig = minhash_signatures(word_shingle_stream(docs))
     configs = [(8, 1), (4, 2), (2, 4), (1, 8)]
     multi = {
         (r.cfg, r.id_a, r.id_b)

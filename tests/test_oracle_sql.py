@@ -84,10 +84,7 @@ def test_no_oracle_sql_is_pasted_twice():
 # Code runs that repeat, keyed by the top-level definitions holding the
 # later and the earlier copy. Only a parameter list shared by two different
 # algorithms belongs here: a repeated computation is folded into a helper.
-COPIES_ALLOWED = {
-    ("operators/similarity.py:ivf_pq_residual_search", "operators/similarity.py:ivf_pq_search"):
-        "parameter list only: raw-vector and residual IVF-PQ share their knobs",
-}
+COPIES_ALLOWED: dict[tuple[str, str], str] = {}
 
 
 def _code_lines(path: Path) -> list[tuple[int, str, str]]:

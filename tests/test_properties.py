@@ -315,7 +315,7 @@ def test_linear_attribution_conservation_batch(spark):
         )
     conv = spark.createDataFrame(conv_rows, ["user_id", "conv_id", "ts", "value"])
     tch = spark.createDataFrame(touch_rows, ["user_id", "ts", "channel"])
-    rows = linear_attribution(conv, tch, key="user_id", window="7 days").collect()
+    rows = linear_attribution(conv, tch, key="user_id").collect()
     by_conv = {}
     for r in rows:
         by_conv.setdefault(r.conv_id, []).append(r)
@@ -373,7 +373,7 @@ def test_seasonal_decompose_identity_batch(spark):
     daily = spark.createDataFrame(
         [(d, v) for d, v in enumerate(values)], "day long, v double"
     ).select("day", F.col("v").cast("decimal(18,6)").alias("val_dec"))
-    rows = seasonal_decompose(daily, "day", "val_dec").collect()
+    rows = seasonal_decompose(daily).collect()
     assert len(rows) == 34
     for r in rows:
         assert abs(r.val - (r.trend + r.seasonal + r.resid)) < 5e-6

@@ -28,7 +28,7 @@ ALLOWED = {
     ("operators/text.py", "bpe_learn"): "reference that bpe_learn_batched is checked against",
     ("operators/sharding.py", "pack_shards"): "reference that pack_shards_two_pass is checked against",
     ("operators/drift.py", "covariance_matrix_decimal"): "decimal twin covariance_matrix is checked against",
-    ("operators/similarity.py", "ivf_refine_centroids"): "iterated form of the Lloyd step sim_ivf_refine certifies",
+    ("operators/similarity.py", "ivf_refine_centroids"): "the Lloyd step sim_ivf_refine certifies, as one operator",
     ("functions/timeutil.py", "int_to_time_text"): "inverse of time_text_to_int in its property test",
     ("cachereg.py", "memoized"): "read-only accessor tests inspect the session memo through",
 }

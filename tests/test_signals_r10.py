@@ -14,7 +14,7 @@ def test_hits_int_hand_computed(spark):
     edges = spark.createDataFrame(
         [(1, 2), (3, 2), (2, 4)], ["src", "dst"]
     )
-    rows = {r.id: r for r in hits_int(nodes, edges, rounds=2).collect()}
+    rows = {r.id: r for r in hits_int(nodes, edges).collect()}
     # a0=1; h1=(1,1,1,0); a1=(0,2,0,1); h2=(2,1,2,0); a2=(0,4,0,1)
     assert (rows[1].hub, rows[1].auth) == (2, 0)
     assert (rows[2].hub, rows[2].auth) == (1, 4)
@@ -30,7 +30,7 @@ def test_label_propagation_tiebreak_and_isolated(spark):
     edges = spark.createDataFrame(tri, ["src", "dst"])
     rows = {
         r.id: r.label
-        for r in label_propagation_int(nodes, edges, rounds=3).collect()
+        for r in label_propagation_int(nodes, edges).collect()
     }
     # round1: (2,1,1) via min tie-break; round2: (1,1,1); stable after
     assert rows == {1: 1, 2: 1, 3: 1, 4: 4}
@@ -185,7 +185,7 @@ def test_pca_power_axis_aligned(spark):
     # variance only along dim 0: pc1 = e0, lambda = var = 1.0
     rows = [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [2.0, 0.0])]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out = {r.i: r for r in pca_top_component(emb, "embedding", dim=2).collect()}
+    out = {r.i: r for r in pca_top_component(emb, dim=2).collect()}
     assert out[0].pc1_milli == 1000 and out[1].pc1_milli == 0
     assert out[0].lambda6 == pytest.approx(1.0)
 
@@ -199,7 +199,7 @@ def test_pca_power_general_direction_and_rayleigh(spark):
     # [[1, 1], [1, 1]] (within the x10^6 truncation of the iterate)
     rows = [(1, [1.0, 1.0]), (2, [-1.0, -1.0]), (3, [0.0, 0.0])]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out = {r.i: r for r in pca_top_component(emb, "embedding", dim=2).collect()}
+    out = {r.i: r for r in pca_top_component(emb, dim=2).collect()}
     assert out[0].pc1_milli == 1000 and out[1].pc1_milli == 1000
     assert out[0].lambda6 == pytest.approx(2.0, abs=1e-6)
 
@@ -214,7 +214,7 @@ def test_pca_power_zero_covariance_fails_loudly(spark):
     rows = [(i, [1.5, 2.5]) for i in range(4)]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
     with pytest.raises(ZeroDivisionError):
-        pca_top_component(emb, "embedding", dim=2).collect()
+        pca_top_component(emb, dim=2).collect()
 
 
 def test_pca_power_unit_scale_and_registry(spark, sf_dir):
@@ -367,7 +367,7 @@ def test_cell_medoid_is_true_argmin(spark, sf_dir):
         for r in QUERIES["sim_cell_medoids"](spark, sf_dir).collect()
     }
     emb = load_table(spark, sf_dir, "embeddings")
-    cell = S.ivf_assign(emb, S.ivf_seed_centroids(emb, 16))
+    cell = S.ivf_assign(emb, S.ivf_seed_centroids(emb))
     vecs, cells = {}, {}
     for r in emb.join(cell.select("vec_id", "centroid_id"), "vec_id").collect():
         vecs[r.vec_id] = [float(x) for x in r.embedding]
@@ -405,7 +405,7 @@ def test_ivf_delta_assign_equals_rebuild(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     old = emb.filter(F.col("vec_id") < 400)
-    cents = S.ivf_seed_centroids(old, 16)
+    cents = S.ivf_seed_centroids(old)
     # full rebuild over old+new, restricted to the delta rows, must be
     # bit-identical to the incremental path (same centroid set)
     rebuild = {
@@ -471,7 +471,7 @@ def test_holt_winters_matches_python_recursion(spark):
     daily = spark.createDataFrame(
         [("a", d, x) for d, x in enumerate(xs)], ["key", "day", "x"]
     )
-    r = holt_winters_forecast(daily, period=7, horizons=(1, 7)).collect()[0]
+    r = holt_winters_forecast(daily).collect()[0]
     l, b, s = None, 0.0, [0.0] * 7
     for t, x in enumerate(xs):
         idx = t % 7
@@ -636,7 +636,7 @@ def test_hw_backtest_prefix_fit_excludes_target(spark):
     daily = spark.createDataFrame(
         [("a", d, x) for d, x in enumerate(xs)], ["key", "day", "x"]
     )
-    rows = {r.origin: r for r in hw_backtest(daily, n_origins=3).collect()}
+    rows = {r.origin: r for r in hw_backtest(daily).collect()}
     assert sorted(rows) == [6, 7, 8]
     # each origin's forecast equals the batch fit on the strict prefix
     for tgt, r in rows.items():
@@ -668,7 +668,7 @@ def test_winnowing_guarantee_and_density(spark):
         ],
         ["doc_id", "text"],
     )
-    fp = winnowing_fingerprints(docs, n=3, window=4)
+    fp = winnowing_fingerprints(docs)
     rows = fp.collect()
     by_doc = {}
     for r in rows:
@@ -731,7 +731,7 @@ def test_hw_backtest_single_day_group_emits_nothing(spark):
         [("solo", 0, 42.0), ("pair", 0, 1.0), ("pair", 1, 2.0)],
         ["key", "day", "x"],
     )
-    rows = hw_backtest(daily, n_origins=3).collect()
+    rows = hw_backtest(daily).collect()
     keys = {r.key for r in rows}
     assert "solo" not in keys            # 1-day group: no backtestable origin
     assert [r.origin for r in rows if r.key == "pair"] == [2]
@@ -747,7 +747,7 @@ def test_winnowing_blocks_cover_overlong_docs(spark):
     docs = spark.createDataFrame(
         [(1, " ".join(words)), (2, "a b c d e f")], ["doc_id", "text"]
     )
-    rows = winnowing_fingerprints(docs, n=3, window=4).collect()
+    rows = winnowing_fingerprints(docs).collect()
     got = {(r.pos, r.h) for r in rows if r.id == 1}
     assert max(p for p, _ in got) > 1023  # the tail IS fingerprinted now
     # block 0 equals winnowing a doc cut at exactly 1024 grams
@@ -755,7 +755,7 @@ def test_winnowing_blocks_cover_overlong_docs(spark):
     want0 = {
         (r.pos, r.h)
         for r in winnowing_fingerprints(
-            spark.createDataFrame([(1, cut)], ["doc_id", "text"]), n=3, window=4
+            spark.createDataFrame([(1, cut)], ["doc_id", "text"])
         ).collect()
     }
     assert {ph for ph in got if ph[0] <= 1023} == want0
@@ -765,7 +765,7 @@ def test_winnowing_blocks_cover_overlong_docs(spark):
     want1 = {
         (r.pos + 1024, r.h)
         for r in winnowing_fingerprints(
-            spark.createDataFrame([(1, tail)], ["doc_id", "text"]), n=3, window=4
+            spark.createDataFrame([(1, tail)], ["doc_id", "text"])
         ).collect()
     }
     assert {ph for ph in got if ph[0] >= 1024} == want1
@@ -829,12 +829,12 @@ def test_fixed_round_fixpoints_sql_executions(spark):
         ["src", "dst"],
     )
     runs = {
-        "pagerank_int": lambda: G.pagerank_int(nodes, G.out_degree_weighted(edges), iterations=3),
+        "pagerank_int": lambda: G.pagerank_int(nodes, G.out_degree_weighted(edges)),
         "personalized_pagerank_int": lambda: G.personalized_pagerank_int(
-            G.out_degree_weighted(edges), nodes.filter(F.col("id") % 4 == 0), iterations=3
+            G.out_degree_weighted(edges), nodes.filter(F.col("id") % 4 == 0)
         ),
-        "hits_int": lambda: G.hits_int(nodes, edges, rounds=2),
-        "label_propagation_int": lambda: G.label_propagation_int(nodes, edges, rounds=3),
+        "hits_int": lambda: G.hits_int(nodes, edges),
+        "label_propagation_int": lambda: G.label_propagation_int(nodes, edges),
     }
     nodes.count()  # at least one execution on record
     got = {}

@@ -81,7 +81,7 @@ class TestSeasonalDecompose:
         # value = 100 + phase pattern; trend flat, residual ~ 0
         pattern = [5.0, -3.0, 0.0, 2.0, -4.0, 1.0, -1.0]
         values = [100.0 + pattern[d % 7] for d in range(28)]
-        out = seasonal_decompose(self._daily(spark, values), "day", "val_dec")
+        out = seasonal_decompose(self._daily(spark, values))
         rows = {r.day: r for r in out.collect()}
         assert len(rows) == 22  # 28 days minus 3 each edge
         for r in rows.values():
@@ -93,14 +93,14 @@ class TestSeasonalDecompose:
 
     def test_linear_trend_recovered(self, spark):
         values = [10.0 + 2.0 * d for d in range(21)]
-        out = seasonal_decompose(self._daily(spark, values), "day", "val_dec")
+        out = seasonal_decompose(self._daily(spark, values))
         for r in out.collect():
             # centered MA of a linear series IS the series
             assert r.trend == pytest.approx(10.0 + 2.0 * r.day, abs=1e-6)
             assert r.seasonal == pytest.approx(0.0, abs=1e-6)
 
     def test_short_series_empty(self, spark):
-        out = seasonal_decompose(self._daily(spark, [1.0] * 6), "day", "val_dec")
+        out = seasonal_decompose(self._daily(spark, [1.0] * 6))
         assert out.count() == 0  # no day has a full centered window
 
 

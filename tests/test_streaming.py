@@ -59,7 +59,7 @@ def test_stream_stream_interval_join(spark, tmp_path):
          (2, t0 + datetime.timedelta(minutes=20), "b2")],
         "buys",
     )
-    joined = stream_stream_interval_join(clicks, buys, "user_id", within="10 minutes")
+    joined = stream_stream_interval_join(clicks, buys, "user_id")
     out = str(tmp_path / "out")
     q = (
         joined.writeStream.format("parquet")

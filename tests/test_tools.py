@@ -45,6 +45,11 @@ def test_ab_spread_main(tool_env, capsys):
     for name in QUERIES:
         qmod = importlib.import_module(REGISTRY[name].__module__)
         assert qmod.load_table is catalog.load_table
+    # and so is the identity spread_scan both arms run with
+    from odbc2parquet_spark.queries import dedup, textops
+
+    assert catalog.spread_scan.__name__ == "spread_scan"
+    assert dedup.spread_scan is textops.spread_scan is catalog.spread_scan
 
 
 def test_check_correctness_rejects_unregistered_names_before_spark(monkeypatch):

@@ -6,8 +6,12 @@ For each query, alternates REPS pairs of (A: natural layout, B: load_table
 wrapped in spread_scan for <table>) inside ONE session, cold caches per
 rep (``bench.reset`` then ``bench.run_query``, the standalone protocol),
 and prints both medians and mins.
-The B variant monkeypatches the query module's `load_table` reference —
-measurement only; a win is landed as an explicit call-site edit.
+Both arms run with every spread_scan the code calls (``catalog.spread_scan``
+and each package module's imported name) replaced by the identity, so A
+is the natural layout even where the query already spreads, and B
+spreads <table> once, at its load. B monkeypatches the query module's
+`load_table` reference — measurement only; a win is landed as an
+explicit call-site edit.
 
 This box shows ±15-20% session-to-session drift on identical plans, so
 same-session interleaving is the only defensible comparison (see
@@ -17,6 +21,7 @@ $SPARK_GRAFT_BENCH_REPS (default 3 pairs).
 
 from __future__ import annotations
 
+import contextlib
 import importlib
 import os
 import statistics
@@ -41,26 +46,43 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     orig_load = catalog.load_table
+    spread_scan = catalog.spread_scan
 
     def spread_load(sp, sfd, name):
         df = orig_load(sp, sfd, name)
-        return catalog.spread_scan(df) if name == table else df
+        return spread_scan(df) if name == table else df
 
     def run(qname: str) -> float:
         reset(spark)
         return run_query(spark, qname, sf_dir)
+
+    @contextlib.contextmanager
+    def natural_layout():
+        holders = [
+            m for name, m in list(sys.modules.items())
+            if name.startswith("odbc2parquet_spark") and getattr(m, "spread_scan", None) is spread_scan
+        ]
+        for m in holders:
+            m.spread_scan = lambda df: df
+        try:
+            yield
+        finally:
+            for m in holders:
+                m.spread_scan = spread_scan
 
     for qname in names:
         mod = importlib.import_module(QUERIES[qname].__module__)
         a_times, b_times = [], []
         run(qname)  # codegen/JIT warmup, untimed
         for _ in range(reps):
-            a_times.append(run(qname))
-            mod.load_table = spread_load  # type: ignore[attr-defined]
-            try:
-                b_times.append(run(qname))
-            finally:
-                mod.load_table = orig_load  # type: ignore[attr-defined]
+            with natural_layout():
+                a_times.append(run(qname))
+            with natural_layout():
+                mod.load_table = spread_load  # type: ignore[attr-defined]
+                try:
+                    b_times.append(run(qname))
+                finally:
+                    mod.load_table = orig_load  # type: ignore[attr-defined]
         print(
             f"{qname} table={table}: "
             f"A(natural) med={statistics.median(a_times):.3f} min={min(a_times):.3f} "
