@@ -10,12 +10,14 @@ views reach the parquet reader as PushedFilters/ReadSchema.
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from odbc2parquet_spark import cachereg
 from odbc2parquet_spark.params import quote_identifier
+from odbc2parquet_spark.sinks.parquet_sink import audit_output
 
 #: table names the driver generates at every scale factor (TESTDATA.md)
 TABLES = (
@@ -71,6 +73,16 @@ def _read(spark: SparkSession, path: str, name: str) -> DataFrame:
         "value",
         "props",
     )
+
+
+def footer_row_count(df: DataFrame) -> int:
+    """Rows of a parquet read, summed from the footers of exactly
+    ``df.inputFiles()`` — no Spark job. Falls back to ``count()`` when a
+    file is not on the local filesystem (``file:`` URI)."""
+    uris = [urlparse(u) for u in df.inputFiles()]
+    if any(u.scheme != "file" for u in uris):
+        return df.count()
+    return audit_output([unquote(u.path) for u in uris])["n_rows"]
 
 
 def spread_scan(df: DataFrame) -> DataFrame:

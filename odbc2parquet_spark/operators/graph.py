@@ -17,10 +17,14 @@ scheduler round trip when it is materialized. One rule trades the two:
   loop that reaches it raises RuntimeError naming the operator; an
   unconverged result is never returned.
 * A fixed-round loop stays lazy, truncated by an eager checkpoint every
-  ``_TRUNCATE_EVERY`` rounds and on the last round, so a short run is one
-  plan and one job. When the step reads the state twice, the plan doubles
-  per lazy round (2^4-bounded between truncations) and each lazy round is
-  persisted so its data is computed once.
+  ``_TRUNCATE_EVERY`` rounds. The last round is checkpointed only when
+  the loop holds frames it must release on return (a pinned edge list,
+  an earlier truncation or persisted rounds), because the result would
+  read them; otherwise the loop returns a lazy plan and runs no job, so
+  a short walk is one plan run by the caller's action. When the step
+  reads the state twice, the plan doubles per lazy round (2^4-bounded
+  between truncations) and each lazy round is persisted so its data is
+  computed once.
 * A separate edge list the step reads every round is materialized once:
   persisted lazily when the lazy state chain is linear, otherwise
   checkpointed eagerly, because a persist caches blocks but re-embeds the
@@ -28,7 +32,8 @@ scheduler round trip when it is materialized. One rule trades the two:
 
 The two PageRank walks take an out-degree-weighted edge list
 (src, dst, out_deg), built by :func:`out_degree_weighted`, and read it as
-is every round; its owner materializes and releases it. A round is one
+is every round; its owner materializes and releases it, and keeps it
+until the caller's action has run a walk returned lazy. A round is one
 groupBy(id) over the union of the contribution rows (dst, rank div
 out_deg) and one row per node carrying its constant term (the teleport
 floor), so no join back to the node or seed list follows the aggregate.
@@ -96,7 +101,8 @@ def _fixpoint(
             state = keep(state, True)
         for i in range(rounds):
             new = step(state, *args)
-            if tested or i + 1 == rounds or (i + 1) % _TRUNCATE_EVERY == 0:
+            last = i + 1 == rounds and bool(held)  # the result must outlive them
+            if tested or last or (i + 1) % _TRUNCATE_EVERY == 0:
                 new = keep(new, True)
                 done = tested and converged(new, state)
                 release(held[pinned:-1])  # superseded rounds
@@ -383,7 +389,9 @@ def _rank_walk(
     return _fixpoint(seed, step, iterations)
 
 
-def pagerank_int(nodes: DataFrame, weighted: DataFrame, iterations: int = 3) -> DataFrame:
+def pagerank_int(
+    nodes: DataFrame, weighted: DataFrame, n_nodes: int, iterations: int = 3
+) -> DataFrame:
     """Fixed-iteration PageRank in exact integer micro-units
     (rank x 10^12 as int64) — bit-identical on any engine.
 
@@ -398,8 +406,12 @@ def pagerank_int(nodes: DataFrame, weighted: DataFrame, iterations: int = 3) -> 
     between rounds.
 
     ``weighted`` is the graph as an :func:`out_degree_weighted` list.
+    ``n_nodes`` is N, the row count of ``nodes``; the caller supplies it
+    (a parquet scan's footers hold it, ``catalog.footer_row_count``), so
+    building the walk runs no Spark job, and a walk of at most
+    ``_TRUNCATE_EVERY`` rounds comes back as one lazy plan.
     """
-    base = (10**12) // nodes.count()
+    base = (10**12) // n_nodes
     ids = nodes.select("id")
     floor = ids.select("id", F.lit((15 * base) // 100).alias("f"))
     seed = ids.select("id", F.lit(base).alias("rank"))
@@ -425,12 +437,18 @@ def personalized_pagerank_int(
     exactly 0 and are left out, so the result is naturally sparse — at
     100 TB the rank frontier (not the corpus) is what each iteration
     shuffles, and the per-iteration cost tracks the seed neighborhood
-    size. ``weighted`` is as in :func:`pagerank_int`.
+    size. ``weighted`` is as in :func:`pagerank_int`. The seed count is
+    a one-row aggregate the seed and floor rows read as a scalar subquery
+    (a cross join would plan a nested-loop join), so building the walk
+    runs no Spark job.
     """
     seed_ids = seeds.select("id").distinct()
-    base = (10**12) // seed_ids.count()
-    floor = seed_ids.select("id", F.lit((15 * base) // 100).alias("f"))
-    seed = seed_ids.select("id", F.lit(base).cast("long").alias("rank"))
+    n_seeds = seed_ids.agg(F.count("*")).scalar()
+    based = seed_ids.select("id", n_seeds.alias("n")).select(
+        "id", F.expr("1000000000000 div n").alias("base")
+    )
+    floor = based.select("id", F.expr("(15 * base) div 100").alias("f"))
+    seed = based.select("id", F.col("base").alias("rank"))
     return _rank_walk(weighted, seed, floor, F.col("rank") > 0, iterations)
 
 

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from odbc2parquet_spark import cachereg
-from odbc2parquet_spark.catalog import load_table, table_path
+from odbc2parquet_spark.catalog import footer_row_count, load_table, table_path
 from odbc2parquet_spark.operators import similarity as S
 from odbc2parquet_spark.queries import query
 
@@ -1093,23 +1093,19 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.knn_graph(emb, n_planes=_N_PLANES, dim=_DIM)
 
 
-def _proj_sql() -> str:
-    planes = _planes_sql()[:16]
-    scale = 0.25  # 1 / sqrt(16)
-    cols = []
-    for j, lits in enumerate(planes):
-        d = (
-            f"list_sum(list_transform(list_zip(embedding, {lits}), "
-            f"x -> CAST(x[1] AS DOUBLE) * x[2]))"
-        )
-        cols.append(f"ROUND({d} * {scale!r}, 6)")
-    return "[" + ", ".join(cols) + "]"
+#: the 16-d random projection of ``embedding`` as a DuckDB list: a dot
+#: with each of the first 16 planes, scaled by 1 / sqrt(16)
+_PROJ_SQL = "[" + ", ".join(
+    f"ROUND(list_sum(list_transform(list_zip(embedding, {lits}), "
+    f"x -> CAST(x[1] AS DOUBLE) * x[2])) * 0.25, 6)"
+    for lits in _planes_sql()[:16]
+) + "]"
 
 
 @query(
     "sim_random_projection",
     oracle=f"""
-    WITH p AS (SELECT vec_id, {_proj_sql()} AS proj FROM embeddings)
+    WITH p AS (SELECT vec_id, {_PROJ_SQL} AS proj FROM embeddings)
     SELECT vec_id, CAST(generate_subscripts(proj, 1) - 1 AS INTEGER) AS pos,
            unnest(proj) AS val
     FROM p
@@ -1177,13 +1173,17 @@ def sim_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the LSH similarity graph — a centrality/quality signal for
     curation. Iterative distributed fixpoint on Spark; the oracle unrolls
     the same three rounds in SQL, and the integer spec makes the engines
-    agree bit-for-bit where floating PageRank could not."""
+    agree bit-for-bit where floating PageRank could not. N comes from the
+    embeddings file's parquet footers, so building the walk runs no Spark
+    job; the returned plan reads the memoized weighted list when the
+    caller's action runs, so ``cachereg.release`` must not come between
+    the two."""
     from odbc2parquet_spark.operators.graph import pagerank_int
 
     emb = load_table(spark, sf_dir, "embeddings")
     weighted = _lsh_graph_weighted(spark, sf_dir)
     nodes = emb.select(F.col("vec_id").alias("id"))
-    return pagerank_int(nodes, weighted)
+    return pagerank_int(nodes, weighted, footer_row_count(emb))
 
 
 def _ppr_iter_sql(i: int) -> str:
@@ -1587,14 +1587,13 @@ def sim_ivf_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mmr_oracle() -> str:
-    """Unrolled MMR oracle: the greedy argmax loop as 4 chained CTEs (12
-    candidates for each of the first 8 probes), generated so the step
-    count can't drift from the Spark side."""
-    head = (
-        "\n    WITH "
-        + _norms_cte("n")
-        + f""",
+#: Unrolled MMR oracle: the greedy argmax loop as 4 chained CTEs (12
+#: candidates for each of the first 8 probes), generated so the step
+#: count can't drift from the Spark side.
+_MMR_ORACLE = (
+    "\n    WITH "
+    + _norms_cte("n")
+    + f""",
     scored AS (
         SELECT a.vec_id AS p, b.vec_id AS c,
                ROUND({_DOT} / SQRT(a.nsq * b.nsq), 4) AS rel
@@ -1622,36 +1621,32 @@ def _mmr_oracle() -> str:
         JOIN sel1 ON cd.p = sel1.p AND cd.c != sel1.c
         JOIN sims s ON s.p = cd.p AND s.c1 = cd.c AND s.c2 = sel1.c
     )"""
-    )
-    parts = [head]
-    for t in range(2, 5):
-        parts.append(f""",
+    + "".join(
+        f""",
     sel{t} AS (
         SELECT p, c, ROUND(0.5 * rel - 0.5 * m, 6) AS score FROM st{t - 1}
         QUALIFY ROW_NUMBER() OVER (PARTITION BY p
                                    ORDER BY ROUND(0.5 * rel - 0.5 * m, 6) DESC,
                                             c) = 1
-    )""")
-        if t < 4:
-            parts.append(f""",
+    )"""
+        + (f""",
     st{t} AS (
         SELECT st.p, st.c, st.rel, GREATEST(st.m, s.s) AS m
         FROM st{t - 1} st
         JOIN sel{t} ON st.p = sel{t}.p AND st.c != sel{t}.c
         JOIN sims s ON s.p = st.p AND s.c1 = st.c AND s.c2 = sel{t}.c
-    )""")
-    selects = [
-        "SELECT p AS query_id, 1 AS step, c AS vec_id, ROUND(rel, 6) AS score"
-        " FROM sel1"
-    ]
-    for t in range(2, 5):
-        selects.append(
-            f"SELECT p AS query_id, {t} AS step, c AS vec_id, score FROM sel{t}"
-        )
-    return "".join(parts) + "\n    " + "\n    UNION ALL ".join(selects)
+    )""" if t < 4 else "")
+        for t in range(2, 5)
+    )
+    + "\n    "
+    + "\n    UNION ALL ".join(
+        ["SELECT p AS query_id, 1 AS step, c AS vec_id, ROUND(rel, 6) AS score FROM sel1"]
+        + [f"SELECT p AS query_id, {t} AS step, c AS vec_id, score FROM sel{t}" for t in range(2, 5)]
+    )
+)
 
 
-@query("sim_mmr_topk", oracle=_mmr_oracle())
+@query("sim_mmr_topk", oracle=_MMR_ORACLE)
 def sim_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal-marginal-relevance diversified retrieval
     (operators/similarity.mmr_rerank): exact top-12 candidates per probe,
@@ -2093,14 +2088,13 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_pq_res_ctes() -> str:
-    """The RESIDUAL IVF-PQ chain as DuckDB CTEs: IVF assign -> residual
-    vectors -> residual codebook/codes -> per-(query, probed-cell)
-    residual LUT -> cell-restricted ADC. Mirrors
-    operators/similarity.ivf_pq_residual_search step for step."""
-    return (
-        _CENT_CTE
-        + f""",
+#: The RESIDUAL IVF-PQ chain as DuckDB CTEs: IVF assign -> residual
+#: vectors -> residual codebook/codes -> per-(query, probed-cell)
+#: residual LUT -> cell-restricted ADC. Mirrors
+#: operators/similarity.ivf_pq_residual_search step for step.
+_IVF_PQ_RES_CTES = (
+    _CENT_CTE
+    + f""",
     cvecs AS (
         SELECT centroid_id,
                list_transform(centroid, x -> CAST(x AS DOUBLE)) AS cvec
@@ -2138,8 +2132,8 @@ def _ivf_pq_res_ctes() -> str:
             FROM rscored
         ) WHERE rn = 1
     ),"""
-        + _qprobe_cte()
-        + f""",
+    + _qprobe_cte()
+    + f""",
     qres AS (
         SELECT qp.query_id, qp.centroid_id,
                list_transform(list_zip(e.embedding, cv.cvec),
@@ -2174,13 +2168,13 @@ def _ivf_pq_res_ctes() -> str:
                    AND l.subspace = c.subspace AND l.code = c.code
         GROUP BY cd.query_id, cd.vec_id
     )"""
-    )
+)
 
 
 @query(
     "sim_ivf_pq_res_topk",
     oracle="WITH "
-    + _ivf_pq_res_ctes()
+    + _IVF_PQ_RES_CTES
     + _adc_top10_sql("radc"),
 )
 def sim_ivf_pq_res_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2202,7 +2196,7 @@ def sim_ivf_pq_res_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "sim_ivf_pq_res_recall",
     oracle="WITH "
-    + _ivf_pq_res_ctes()
+    + _IVF_PQ_RES_CTES
     + ","
     + _recall10_sql("radc"),
 )

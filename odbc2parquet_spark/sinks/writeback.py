@@ -34,13 +34,12 @@ from __future__ import annotations
 import datetime
 import decimal
 from collections.abc import Callable, Sequence
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from odbc2parquet_spark.catalog import footer_row_count
 from odbc2parquet_spark.params import PlaceholderError, quote_identifier, to_positional
-from odbc2parquet_spark.sinks.parquet_sink import audit_output
 
 #: rows per executemany call — the reference's default bulk batch
 #: (src/query/batch_size_limit.rs:6-15).
@@ -160,16 +159,6 @@ def _bulk_execute(
         )
     )
     return counter.value
-
-
-def footer_row_count(df: DataFrame) -> int:
-    """Rows of a parquet read, summed from the footers of exactly
-    ``df.inputFiles()`` — no Spark job. Falls back to ``count()`` when a
-    file is not on the local filesystem (``file:`` URI)."""
-    uris = [urlparse(u) for u in df.inputFiles()]
-    if any(u.scheme != "file" for u in uris):
-        return df.count()
-    return audit_output([unquote(u.path) for u in uris])["n_rows"]
 
 
 def insert_parquet(

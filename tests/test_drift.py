@@ -280,7 +280,7 @@ _FIXPOINT_RUNS = {
     ),
     "k_core": lambda nodes, edges, pairs: graph.k_core(pairs, 1),
     "pagerank_int": lambda nodes, edges, pairs: graph.pagerank_int(
-        nodes, graph.out_degree_weighted(edges), iterations=5
+        nodes, graph.out_degree_weighted(edges), n_nodes=20, iterations=5
     ),
     "personalized_pagerank_int": lambda nodes, edges, pairs: graph.personalized_pagerank_int(
         graph.out_degree_weighted(edges), nodes.filter(F.col("id") % 5 == 0), iterations=5

@@ -866,7 +866,7 @@ def test_pagerank_int_mass_and_ordering(spark):
     edges = spark.createDataFrame(
         [(0, 1), (1, 0), (0, 2), (2, 0), (0, 3), (3, 0)], ["src", "dst"]
     )
-    ranks = pagerank_int(nodes, out_degree_weighted(edges))
+    ranks = pagerank_int(nodes, out_degree_weighted(edges), n_nodes=4)
     got = {r["id"]: r["rank"] for r in ranks.collect()}
     # the hub must outrank every leaf; leaves are symmetric -> equal ranks
     assert got[0] > got[1]

@@ -313,3 +313,33 @@ def test_python_tasks_run_under_the_package_daemon(spark):
 
     got = spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()
     assert got == [("odbc2parquet_spark.worker_daemon", True)]
+
+
+def test_building_a_column_skips_the_origin_capture(spark):
+    """PySpark's per-call origin capture is off for the whole session, so
+    building an expression costs py4j round trips for the expression
+    alone. With the capture on, each of the 9 wrapped calls below adds
+    about four more (a JVM class lookup, a conf read, a set and a clear):
+    79 round trips against 19."""
+    from unittest import mock
+
+    import py4j.clientserver
+    from pyspark.sql import functions as F
+
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert session.session_conf(env={})[1][key] == "false"
+
+    def build():
+        return F.when(F.col("a") > 1, F.col("b") + F.lit(2)).otherwise(F.lit(0)).alias("c")
+
+    build()  # the first wrapped call reads and caches the flag
+    send = py4j.clientserver.ClientServerConnection.send_command
+    calls = []
+
+    def counting(self, command):
+        calls.append(command)
+        return send(self, command)
+
+    with mock.patch.object(py4j.clientserver.ClientServerConnection, "send_command", counting):
+        build()
+    assert 0 < len(calls) <= 30, len(calls)

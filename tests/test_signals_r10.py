@@ -800,7 +800,7 @@ def test_pagerank_intermediate_checkpoint_branch(spark):
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 0), (3, 4)], ["src", "dst"]
     )
-    out = pagerank_int(nodes, out_degree_weighted(edges), iterations=9).collect()
+    out = pagerank_int(nodes, out_degree_weighted(edges), n_nodes=6, iterations=9).collect()
     assert len(out) == 6
     assert sum(r["rank"] for r in out) <= 10**12
     assert all(r["rank"] >= (15 * (10**12 // 6)) // 100 for r in out)
@@ -808,11 +808,13 @@ def test_pagerank_intermediate_checkpoint_branch(spark):
 
 def test_fixed_round_fixpoints_sql_executions(spark):
     """The fixed-round cadence, pinned by the SQL executions each operator
-    runs while it is built, at the round counts the registry queries use:
-    a count taken before the loop (PageRank's nodes, PPR's seeds) or the
-    edge-list checkpoint, plus ONE eager checkpoint of the last round —
-    no per-round jobs. A cadence change shows up here, not only as a
-    bench regression."""
+    runs while it is built, at the round counts the registry queries use.
+    The PageRank walks hold no frame (the caller passes N, PPR's seed
+    count is a lazy aggregate), so they run none and come back as one
+    lazy plan. HITS and label propagation checkpoint their edge list and
+    then the last round, which would otherwise read the released edges:
+    two, and no per-round jobs. A cadence change shows up here, not only
+    as a bench regression."""
     from odbc2parquet_spark.operators import graph as G
 
     store = spark._jsparkSession.sharedState().statusStore()
@@ -829,7 +831,7 @@ def test_fixed_round_fixpoints_sql_executions(spark):
         ["src", "dst"],
     )
     runs = {
-        "pagerank_int": lambda: G.pagerank_int(nodes, G.out_degree_weighted(edges)),
+        "pagerank_int": lambda: G.pagerank_int(nodes, G.out_degree_weighted(edges), n_nodes=12),
         "personalized_pagerank_int": lambda: G.personalized_pagerank_int(
             G.out_degree_weighted(edges), nodes.filter(F.col("id") % 4 == 0)
         ),
@@ -843,20 +845,22 @@ def test_fixed_round_fixpoints_sql_executions(spark):
         run()
         got[name] = last_execution_id() - before
     assert got == {
-        "pagerank_int": 2,
-        "personalized_pagerank_int": 2,
+        "pagerank_int": 0,
+        "personalized_pagerank_int": 0,
         "hits_int": 2,
         "label_propagation_int": 2,
     }
 
 
-def test_warm_sim_pagerank_runs_at_most_13_jobs(spark, sf_dir):
+def test_warm_sim_pagerank_runs_at_most_6_jobs(spark, sf_dir):
     """A warm sim_pagerank (its weighted graph memoized by the cold call)
-    pays the node count, the three rounds and the write, counted by job
-    group. Each round is one groupBy over contributions and floor rows
-    read from the memoized (src, dst, out_deg) list; with a join back to
-    the node list per round and the out-degree window rebuilt per call
-    the same pass ran 19 jobs."""
+    runs its three rounds inside the write, counted by job group: the
+    node count comes from parquet footers and the last round is not
+    checkpointed before the write. Each round is one groupBy over
+    contributions and floor rows read from the memoized (src, dst,
+    out_deg) list. With the node count and the last-round checkpoint as
+    eager jobs the same pass ran 9 jobs; with a join back to the node
+    list per round and the out-degree window rebuilt per call, 19."""
     from odbc2parquet_spark.queries import QUERIES
 
     def run():
@@ -871,7 +875,7 @@ def test_warm_sim_pagerank_runs_at_most_13_jobs(spark, sf_dir):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup("warm_sim_pagerank")
-    assert 0 < len(jobs) <= 13, len(jobs)
+    assert 0 < len(jobs) <= 6, len(jobs)
 
 
 def test_value_anomalies_constant_group_no_nan_rows(spark):
