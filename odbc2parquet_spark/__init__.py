@@ -13,8 +13,8 @@ Layout
 - ``session``    : SparkSession builder tuned for local[N] and cluster use.
 - ``catalog``    : register parquet table directories as temp views.
 - ``engine``     : the ``query`` entry point (SQL + params -> DataFrame -> sink).
-- ``mappings``   : relational-type -> Spark/Parquet type mapping layer
-                   (decimal matrix, timestamp precision tiers, TIME-as-int, ...).
+- ``mappings``   : the CLI's type-mapping flags (--avoid-decimal,
+                   --column-length-limit) applied to a result's Spark schema.
 - ``params``     : positional ``?`` and named ``?col?`` parameter binding.
 - ``sinks``      : parquet sink shaping (compression, splitting, suffixes,
                    no-empty-file) and the write-back (insert/exec) path.

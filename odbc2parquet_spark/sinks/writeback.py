@@ -112,7 +112,6 @@ def _executemany_partition(
     dtypes: list[T.DataType],
     col_positions: list[int],
     connection_factory: Callable,
-    batch_rows: int,
     row_counter,
 ) -> None:
     """Runs on executors: one connection per partition, batched executemany.
@@ -133,7 +132,7 @@ def _executemany_partition(
                 tuple(_to_dbapi_value(row[p], dtypes[p]) for p in col_positions)
             )
             n += 1
-            if len(batch) >= batch_rows:
+            if len(batch) >= DEFAULT_WRITE_BATCH_ROWS:
                 cur.executemany(statement, batch)
                 batch.clear()
         if batch:
@@ -145,8 +144,7 @@ def _executemany_partition(
 
 
 def _bulk_execute(
-    df: DataFrame, statement: str, col_positions: list[int],
-    connection_factory: Callable, batch_rows: int,
+    df: DataFrame, statement: str, col_positions: list[int], connection_factory: Callable
 ) -> int:
     """Execute ``statement`` once per row of ``df`` through every
     partition's own connection; returns the rows written, counted in the
@@ -155,7 +153,7 @@ def _bulk_execute(
     counter = df.sparkSession.sparkContext.accumulator(0)
     df.foreachPartition(
         lambda rows: _executemany_partition(
-            rows, statement, dtypes, col_positions, connection_factory, batch_rows, counter
+            rows, statement, dtypes, col_positions, connection_factory, counter
         )
     )
     return counter.value
@@ -169,7 +167,6 @@ def insert_parquet(
     connection_factory: Callable | None = None,
     jdbc_url: str | None = None,
     jdbc_options: dict | None = None,
-    batch_rows: int = DEFAULT_WRITE_BATCH_ROWS,
 ) -> int:
     """The ``insert`` subcommand: parquet file -> bulk INSERT.
 
@@ -187,7 +184,7 @@ def insert_parquet(
             .mode("append")
             .option("url", jdbc_url)
             .option("dbtable", table)
-            .option("batchsize", batch_rows)
+            .option("batchsize", DEFAULT_WRITE_BATCH_ROWS)
             .options(**(jdbc_options or {}))
             .save()
         )
@@ -195,9 +192,7 @@ def insert_parquet(
     if connection_factory is None:
         raise ValueError("need jdbc_url or connection_factory")
     statement = generate_insert_statement(table, df.columns)
-    return _bulk_execute(
-        df, statement, list(range(len(df.columns))), connection_factory, batch_rows
-    )
+    return _bulk_execute(df, statement, list(range(len(df.columns))), connection_factory)
 
 
 def execute_parquet(
@@ -206,7 +201,6 @@ def execute_parquet(
     statement: str,
     *,
     connection_factory: Callable,
-    batch_rows: int = DEFAULT_WRITE_BATCH_ROWS,
 ) -> int:
     """The ``exec`` subcommand: named ``?col?`` placeholders bound to
     parquet columns, statement executed once per row in bulk batches."""
@@ -220,4 +214,4 @@ def execute_parquet(
             f"placeholder column(s) not in parquet file: {', '.join(missing)}"
         )
     positions = [col_index[n] for n in names]
-    return _bulk_execute(df, positional, positions, connection_factory, batch_rows)
+    return _bulk_execute(df, positional, positions, connection_factory)

@@ -32,14 +32,14 @@ def dsn_file_path() -> str:
     return os.path.expanduser(os.environ.get(ENV_VAR) or DEFAULT_DSN_FILE)
 
 
-def load_dsn_registry(path: str | None = None) -> dict[str, dict]:
+def load_dsn_registry() -> dict[str, dict]:
     """Parse the alias file into {name: {url, user?, password?}}.
 
     A missing file is an empty registry (the common case for users who
     never use ``--dsn``); a malformed file or entry is an error naming
     the file, not a silent skip.
     """
-    path = path or dsn_file_path()
+    path = dsn_file_path()
     if not os.path.isfile(path):
         return {}
     try:
@@ -62,20 +62,19 @@ def load_dsn_registry(path: str | None = None) -> dict[str, dict]:
     return reg
 
 
-def resolve_dsn(name: str, path: str | None = None) -> dict:
+def resolve_dsn(name: str) -> dict:
     """Resolve a DSN alias to its {url, user?, password?} entry.
 
     The error path mirrors what an ODBC driver manager tells you about
     an unknown DSN, made actionable: which file was consulted, which
     aliases exist, and how to register the missing one.
     """
-    path = path or dsn_file_path()
-    reg = load_dsn_registry(path)
+    reg = load_dsn_registry()
     if name in reg:
         return reg[name]
     known = ", ".join(sorted(reg)) if reg else "(none)"
     raise ValueError(
-        f"unknown DSN {name!r}: alias file {path!r} "
+        f"unknown DSN {name!r}: alias file {dsn_file_path()!r} "
         f"{'defines: ' + known if reg else 'does not exist or is empty'}. "
         f"Register it as {{\"{name}\": {{\"url\": \"jdbc:...\"}}}} there, "
         f"point {ENV_VAR} at another alias file, or pass --jdbc-url directly."

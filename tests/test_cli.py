@@ -3,6 +3,7 @@
 import json
 import os
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
@@ -149,8 +150,9 @@ def test_cli_list_drivers(spark, capsys):
 
 def test_cli_avoid_decimal_remaps_output_types(spark, sf_dir, tmp_path, capsys):
     # mirror of the reference's decimal CLI cluster (tests/integration.rs
-    # decimal cases): --avoid-decimal turns scale-0 decimals into integers
-    # and scaled decimals into exact decimal text
+    # decimal cases): --avoid-decimal turns scale-0 decimals of p <= 18
+    # into integers, keeps wider ones decimal and turns scaled decimals
+    # into exact decimal text
     out = str(tmp_path / "dec.par")
     rc = main(
         [
@@ -158,14 +160,18 @@ def test_cli_avoid_decimal_remaps_output_types(spark, sf_dir, tmp_path, capsys):
             "--tables-dir", sf_dir,
             "--avoid-decimal",
             out,
-            "SELECT CAST(o_orderkey AS DECIMAL(15,0)) AS key_dec, "
+            "SELECT CAST(o_orderkey AS DECIMAL(9,0)) AS key_dec9, "
+            "       CAST(o_orderkey AS DECIMAL(15,0)) AS key_dec, "
+            "       CAST(o_orderkey AS DECIMAL(25,0)) AS key_dec25, "
             "       CAST(o_totalprice AS DECIMAL(12,2)) AS price_dec "
             "FROM orders WHERE o_orderkey <= 10",
         ]
     )
     assert rc == 0
     t = pq.read_table(json.loads(capsys.readouterr().out)["written"][0])
+    assert t.schema.field("key_dec9").type == "int32"
     assert t.schema.field("key_dec").type == "int64"
+    assert t.schema.field("key_dec25").type == pa.decimal128(25, 0)
     assert t.schema.field("price_dec").type == "string"
     # exact decimal rendering, not float repr
     assert "." in t.column("price_dec")[0].as_py()

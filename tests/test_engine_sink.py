@@ -226,39 +226,22 @@ def test_dir_as_output_errors(engine, tmp_path):
 def test_column_length_limit_errors_by_default(spark):
     # B13: the reference fails loudly with the column name and remediation
     # hint when a value exceeds the limit (conversion_strategy.rs:176-197)
-    from pyspark.sql import functions as F
+    from odbc2parquet_spark.mappings import MappingOptions, apply_mapping_options
 
-    from odbc2parquet_spark.mappings import MappingOptions, SourceType, map_source_type
-
-    m = map_source_type(
-        SourceType(kind="varchar", length=100),
-        MappingOptions(column_length_limit=4),
-        column_name="t",
-    )
-    df = spark.createDataFrame([("abcdefgh",)], ["t"]).select(m.apply(F.col("t")).alias("t"))
+    opts = MappingOptions(column_length_limit=4)
+    df = apply_mapping_options(spark.createDataFrame([("abcdefgh",)], ["t"]), opts)
     with pytest.raises(Exception, match="maximum element length.*'t'"):
         df.collect()
     # values within the limit pass through untouched
-    ok = spark.createDataFrame([("abc",)], ["t"]).select(
-        map_source_type(
-            SourceType(kind="varchar"),
-            MappingOptions(column_length_limit=4),
-            column_name="t",
-        ).apply(F.col("t")).alias("t")
-    )
+    ok = apply_mapping_options(spark.createDataFrame([("abc",)], ["t"]), opts)
     assert ok.first().t == "abc"
 
 
 def test_column_length_limit_truncates_on_opt_in(spark):
-    from pyspark.sql import functions as F
+    from odbc2parquet_spark.mappings import MappingOptions, apply_mapping_options
 
-    from odbc2parquet_spark.mappings import MappingOptions, SourceType, map_source_type
-
-    m = map_source_type(
-        SourceType(kind="varchar", length=100),
-        MappingOptions(column_length_limit=4, length_limit_action="truncate"),
-    )
-    df = spark.createDataFrame([("abcdefgh",)], ["t"]).select(m.apply(F.col("t")).alias("t"))
+    opts = MappingOptions(column_length_limit=4, length_limit_action="truncate")
+    df = apply_mapping_options(spark.createDataFrame([("abcdefgh",)], ["t"]), opts)
     assert df.first().t == "abcd"
 
 

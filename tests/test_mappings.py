@@ -1,4 +1,8 @@
-"""Type-mapping layer vs the reference matrix (SURVEY §1)."""
+"""The CLI's type-mapping rules (``--avoid-decimal``,
+``--column-length-limit``) and the bytes-per-row estimate."""
+
+import datetime
+import decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -6,82 +10,66 @@ from pyspark.sql import types as T
 
 from odbc2parquet_spark.mappings import (
     MappingOptions,
-    SourceType,
+    apply_mapping_options,
     estimate_bytes_per_row,
-    map_source_type,
 )
+
+#: column -> (its type, its type under --avoid-decimal, a value, that
+#: value under --avoid-decimal); decimal.rs:36-40 and :124
+_COLUMNS = {
+    "d9_0": (T.DecimalType(9, 0), T.IntegerType(), decimal.Decimal(7), 7),
+    "d15_0": (T.DecimalType(15, 0), T.LongType(), decimal.Decimal(7), 7),
+    # p=18 is the widest scale-0 decimal that becomes int64
+    "d18_0": (T.DecimalType(18, 0), T.LongType(), decimal.Decimal(7), 7),
+    # p 19..38 s=0 stays decimal: the reference's DecimalAsBinary arm has
+    # no avoid-decimal branch
+    "d25_0": (T.DecimalType(25, 0), T.DecimalType(25, 0), decimal.Decimal(7), decimal.Decimal(7)),
+    # scaled decimals become exact decimal text
+    "d9_2": (T.DecimalType(9, 2), T.StringType(), decimal.Decimal("1.50"), "1.50"),
+    "d33_3": (T.DecimalType(33, 3), T.StringType(), decimal.Decimal("-2.125"), "-2.125"),
+    # a string under the limit; no flag acts on the remaining types
+    "s": (T.StringType(), T.StringType(), "abc", "abc"),
+    "date": (T.DateType(), T.DateType(), datetime.date(2020, 9, 16), datetime.date(2020, 9, 16)),
+    "ts": (
+        T.TimestampNTZType(),
+        T.TimestampNTZType(),
+        datetime.datetime(2020, 9, 16, 3, 54, 12),
+        datetime.datetime(2020, 9, 16, 3, 54, 12),
+    ),
+    "tstz": (
+        T.TimestampType(),
+        T.TimestampType(),
+        datetime.datetime(2020, 9, 16, 3, 54, 12),
+        datetime.datetime(2020, 9, 16, 3, 54, 12),
+    ),
+    "bin": (T.BinaryType(), T.BinaryType(), b"\x00\xff", b"\x00\xff"),
+    "b": (T.ByteType(), T.ByteType(), 1, 1),
+    "sh": (T.ShortType(), T.ShortType(), 2, 2),
+    "i": (T.IntegerType(), T.IntegerType(), 42, 42),
+    "l": (T.LongType(), T.LongType(), 3, 3),
+    "f": (T.FloatType(), T.FloatType(), 0.5, 0.5),
+    "d": (T.DoubleType(), T.DoubleType(), 0.25, 0.25),
+    "bool": (T.BooleanType(), T.BooleanType(), True, True),
+}
 
 
 @pytest.mark.parametrize(
-    "st,opts,expected",
+    "opts",
     [
-        # floats (column_strategy.rs:110-115)
-        (SourceType("real"), None, T.FloatType()),
-        (SourceType("float", precision=20), None, T.FloatType()),
-        (SourceType("float", precision=53), None, T.DoubleType()),
-        (SourceType("double"), None, T.DoubleType()),
-        # integers incl. unsigned tinyint (column_strategy.rs:116-154)
-        (SourceType("tinyint"), None, T.ByteType()),
-        (SourceType("tinyint", unsigned=True), None, T.ShortType()),
-        (SourceType("smallint"), None, T.ShortType()),
-        (SourceType("integer"), None, T.IntegerType()),
-        (SourceType("bigint"), None, T.LongType()),
-        (SourceType("bit"), None, T.BooleanType()),
-        # decimal matrix (decimal.rs:42-134)
-        (SourceType("decimal", precision=9, scale=0), None, T.DecimalType(9, 0)),
-        (SourceType("decimal", precision=9, scale=2), None, T.DecimalType(9, 2)),
-        (SourceType("decimal", precision=13, scale=3), None, T.DecimalType(13, 3)),
-        (SourceType("decimal", precision=33, scale=3), None, T.DecimalType(33, 3)),
-        (SourceType("decimal", precision=42, scale=3), None, T.StringType()),
-        (
-            SourceType("decimal", precision=9, scale=0),
-            MappingOptions(avoid_decimal=True),
-            T.IntegerType(),
-        ),
-        (
-            SourceType("decimal", precision=15, scale=0),
-            MappingOptions(avoid_decimal=True),
-            T.LongType(),
-        ),
-        (
-            SourceType("decimal", precision=9, scale=2),
-            MappingOptions(avoid_decimal=True),
-            T.StringType(),
-        ),
-        (
-            # p=18 is the widest scale-0 decimal that becomes int64
-            SourceType("decimal", precision=18, scale=0),
-            MappingOptions(avoid_decimal=True),
-            T.LongType(),
-        ),
-        (
-            # p 19..38 s=0 stays decimal under avoid_decimal — the
-            # reference's DecimalAsBinary arm has no avoid_decimal branch
-            SourceType("decimal", precision=25, scale=0),
-            MappingOptions(avoid_decimal=True),
-            T.DecimalType(25, 0),
-        ),
-        # temporal (timestamp_precision.rs:17-23, date.rs, time.rs)
-        (SourceType("date"), None, T.DateType()),
-        # explicit precision 0 (datetime2(0)) is the ms tier, NOT unknown
-        (SourceType("timestamp", precision=0), None, T.TimestampNTZType()),
-        (SourceType("timestamp", precision=3), None, T.TimestampNTZType()),
-        (SourceType("timestamp", precision=6), None, T.TimestampNTZType()),
-        (SourceType("timestamp", precision=7), None, T.LongType()),
-        # unknown precision defaults to the widest (ns) tier
-        (SourceType("timestamp"), None, T.LongType()),
-        (SourceType("datetimeoffset", precision=7), None, T.TimestampType()),
-        (SourceType("time", precision=0), None, T.IntegerType()),
-        (SourceType("time", precision=7), None, T.LongType()),
-        # text/binary/fallback
-        (SourceType("varchar", length=100), None, T.StringType()),
-        (SourceType("binary", length=5), None, T.BinaryType()),
-        (SourceType("varbinary"), None, T.BinaryType()),
-        (SourceType("weird_vendor_type"), None, T.StringType()),
+        MappingOptions(avoid_decimal=True, column_length_limit=64),
+        MappingOptions(avoid_decimal=True),
+        MappingOptions(column_length_limit=64, length_limit_action="truncate"),
+        MappingOptions(column_length_limit=64),
     ],
+    ids=["avoid-limit", "avoid", "limit-truncate", "limit"],
 )
-def test_type_dispatch(st, opts, expected):
-    assert map_source_type(st, opts).spark_type == expected
+def test_type_dispatch(spark, opts):
+    schema = T.StructType([T.StructField(n, c[0]) for n, c in _COLUMNS.items()])
+    df = spark.createDataFrame([tuple(c[2] for c in _COLUMNS.values())], schema)
+    out = apply_mapping_options(df, opts)
+    avoid, cols = opts.avoid_decimal, _COLUMNS.values()
+    assert [f.dataType for f in out.schema.fields] == [c[1] if avoid else c[0] for c in cols]
+    assert tuple(out.first()) == tuple(c[3] if avoid else c[2] for c in cols)
 
 
 def test_bytes_per_row_estimate():
@@ -136,29 +124,3 @@ def test_time_text_to_int(spark):
         .collect()
     )
     assert rt[0].t == "00:05:34.000000"
-
-
-def test_timestamp_ns_range_error(spark):
-    from odbc2parquet_spark.mappings import map_source_type
-
-    m = map_source_type(SourceType("timestamp", precision=7))
-    ok = spark.createDataFrame([("2020-09-16 03:54:12",)], ["t"]).select(
-        m.apply(F.col("t").cast("timestamp")).alias("ns")
-    )
-    assert ok.collect()[0].ns == 1_600_228_452_000_000_000
-    # out of the i64-ns range (timestamp_precision.rs:69-81) -> error
-    bad = spark.createDataFrame([("2263-01-01 00:00:00",)], ["t"]).select(
-        m.apply(F.col("t").cast("timestamp")).alias("ns")
-    )
-    with pytest.raises(Exception, match="out of range|USER_RAISED"):
-        bad.collect()
-
-
-def test_ns_min_boundary_does_not_overflow_i64():
-    # ceil(i64::MIN/1000): the old floor value passed the micros check but
-    # *1000 overflowed int64
-    from odbc2parquet_spark.mappings import NS_MIN_MICROS, NS_MAX_MICROS
-
-    assert NS_MIN_MICROS * 1000 >= -(2**63)
-    assert (NS_MIN_MICROS - 1) * 1000 < -(2**63)
-    assert NS_MAX_MICROS * 1000 <= 2**63 - 1

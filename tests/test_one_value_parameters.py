@@ -1,13 +1,13 @@
-"""Every defaulted parameter of a query-side function is a value some caller sets.
+"""Every defaulted parameter of a query or transfer function is a value some caller sets.
 
 An AST walk, no Spark. A parameter whose every caller passes the default,
 or nothing, only ever takes one value; it is a constant spelled as a knob,
 so it belongs in the body as its literal. The scope is the top-level
-functions of ``operators/``, ``streaming/`` and ``queries/`` (a nested
-function's defaults bind closure values, not options). Callers are every
-call in the package, ``tests/``, ``tools/``, ``bench.py``,
-``__spark_entry__.py`` and ``xferbench/``, resolved by name to every
-in-scope function of that name. A call sets a parameter when it passes
+functions of ``operators/``, ``streaming/``, ``queries/``, ``sinks/`` and
+``sources/`` (a nested function's defaults bind closure values, not
+options). Callers are every call in the package, ``tests/``, ``tools/``,
+``bench.py``, ``__spark_entry__.py`` and ``xferbench/``, resolved by
+name to every in-scope function of that name. A call sets a parameter when it passes
 an expression other than the default, positionally or by keyword, or
 when it forwards ``*args``/``**kwargs``. Passing the caller's own
 defaulted parameter of the same default only sets the parameter if that
@@ -16,12 +16,11 @@ knobs is still one knob.
 
 Tests count as callers for now: a value that a test sets pins a
 behaviour, and whether that behaviour should go is a separate decision
-for each test. The transfer path (``sinks/``, ``sources/``,
-``mappings.py``, ``__main__.py``) and ``session.py`` are out of scope:
-their options have their own guard
-(``test_every_query_option_is_set_by_the_cli_and_read``), and their
+for each test. ``session.py`` and ``__main__.py`` stay out of scope: their
 ``env``/``argv``/``master`` parameters are test-substitution and
-deployment points.
+deployment points. The options objects the CLI builds (``SinkOptions``,
+``MappingOptions``) have their own guard
+(``test_every_query_option_is_set_by_the_cli_and_read``).
 """
 
 from __future__ import annotations
@@ -31,7 +30,7 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 PACKAGE = REPO / "odbc2parquet_spark"
-SCOPE = [PACKAGE / "operators", PACKAGE / "streaming", PACKAGE / "queries"]
+SCOPE = [PACKAGE / d for d in ("operators", "streaming", "queries", "sinks", "sources")]
 CALLERS = [PACKAGE, REPO / "tests", REPO / "tools", REPO / "bench.py", REPO / "__spark_entry__.py", REPO / "xferbench"]
 FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
