@@ -63,7 +63,7 @@ _COLUMNS = {
     ],
     ids=["avoid-limit", "avoid", "limit-truncate", "limit"],
 )
-def test_type_dispatch(spark, opts):
+def test_apply_mapping_options_schema_and_rows(spark, opts):
     schema = T.StructType([T.StructField(n, c[0]) for n, c in _COLUMNS.items()])
     df = spark.createDataFrame([tuple(c[2] for c in _COLUMNS.values())], schema)
     out = apply_mapping_options(df, opts)
@@ -71,6 +71,63 @@ def test_type_dispatch(spark, opts):
     assert [f.dataType for f in out.schema.fields] == [c[1] if avoid else c[0] for c in cols]
     assert tuple(out.first()) == tuple(c[3] if avoid else c[2] for c in cols)
 
+
+_AVOID = MappingOptions(avoid_decimal=True)
+
+#: (case number, the Spark type the JDBC dialect gives a source kind,
+#: options, its type after apply_mapping_options); None means no
+#: --avoid-decimal. The numbers are those of the reference matrix's cases
+#: (column_strategy.rs, decimal.rs); the gaps are kinds no Spark type
+#: reaches: decimal(p > 38), the ns and time-of-day integer tiers and the
+#: unknown-kind text fallback.
+_DISPATCH = [
+    # floats: real, float(20), float(53), double (column_strategy.rs:110-115)
+    (0, T.FloatType(), None, T.FloatType()),
+    (1, T.FloatType(), None, T.FloatType()),
+    (2, T.DoubleType(), None, T.DoubleType()),
+    (3, T.DoubleType(), None, T.DoubleType()),
+    # tinyint, unsigned tinyint, smallint, integer, bigint, bit
+    # (column_strategy.rs:116-154)
+    (4, T.ByteType(), None, T.ByteType()),
+    (5, T.ShortType(), None, T.ShortType()),
+    (6, T.ShortType(), None, T.ShortType()),
+    (7, T.IntegerType(), None, T.IntegerType()),
+    (8, T.LongType(), None, T.LongType()),
+    (9, T.BooleanType(), None, T.BooleanType()),
+    # decimals keep their type without --avoid-decimal (decimal.rs:42-134)
+    (10, T.DecimalType(9, 0), None, T.DecimalType(9, 0)),
+    (11, T.DecimalType(9, 2), None, T.DecimalType(9, 2)),
+    (12, T.DecimalType(13, 3), None, T.DecimalType(13, 3)),
+    (13, T.DecimalType(33, 3), None, T.DecimalType(33, 3)),
+    (15, T.DecimalType(9, 0), _AVOID, T.IntegerType()),
+    (16, T.DecimalType(15, 0), _AVOID, T.LongType()),
+    (17, T.DecimalType(9, 2), _AVOID, T.StringType()),
+    (18, T.DecimalType(18, 0), _AVOID, T.LongType()),
+    (19, T.DecimalType(25, 0), _AVOID, T.DecimalType(25, 0)),
+    # date, timestamp p0/p3/p6, datetimeoffset (timestamp_precision.rs:17-23)
+    (20, T.DateType(), None, T.DateType()),
+    (21, T.TimestampNTZType(), None, T.TimestampNTZType()),
+    (22, T.TimestampNTZType(), None, T.TimestampNTZType()),
+    (23, T.TimestampNTZType(), None, T.TimestampNTZType()),
+    (26, T.TimestampType(), None, T.TimestampType()),
+    # varchar(100), binary(5), varbinary
+    (29, T.StringType(), None, T.StringType()),
+    (30, T.BinaryType(), None, T.BinaryType()),
+    (31, T.BinaryType(), None, T.BinaryType()),
+]
+
+
+@pytest.mark.parametrize(
+    "st,opts,expected",
+    [c[1:] for c in _DISPATCH],
+    ids=[f"st{i}-{'opts%d' % i if o else 'None'}-expected{i}" for i, _, o, _ in _DISPATCH],
+)
+def test_type_dispatch(spark, st, opts, expected):
+    # without --avoid-decimal the length limit is set, so the column goes
+    # through the re-mapping select rather than the no-flag early return
+    opts = opts or MappingOptions(column_length_limit=64)
+    df = spark.createDataFrame([], T.StructType([T.StructField("c", st)]))
+    assert apply_mapping_options(df, opts).schema["c"].dataType == expected
 
 def test_bytes_per_row_estimate():
     schema = T.StructType(
