@@ -164,7 +164,7 @@ def main() -> None:
     timings = {name: round(statistics.median(v), 3) for name, v in samples.items()}
     total = round(sum(timings.values()), 3)
     # Per-query MIN across the shuffled-position reps: the round-11
-    # tools/suite_pressure.py canary study showed suite "inflation" is not
+    # canary study (SCALE.md round 11) showed suite "inflation" is not
     # a monotone accumulation (canary first/last ratio 0.88 over a full
     # 255-query pass; JIT code cache 176 of 240MB, old-gen flat) but
     # VARIANCE — concurrent JIT/GC activity randomly colliding with a
@@ -183,7 +183,7 @@ def main() -> None:
         "value": total,
         # noise-floor total: sum of per-query minima across the shuffled
         # reps — the suite cost with measurement-time JIT/GC collisions
-        # excluded (see tools/suite_pressure.py / SCALE.md round 11)
+        # excluded (see SCALE.md round 11)
         "sum_of_mins": total_min,
         "unit": "sec",
         "sf": sf,

@@ -42,18 +42,16 @@ def time_text_to_int(col: Column, unit: str = "ns") -> Column:
     return out.cast("int") if unit == "ms" else out.cast("long")
 
 
-def int_to_time_text(col: Column, unit: str = "us") -> Column:
-    """Integer since midnight -> ``hh:mm:ss.ffffff`` text.
+def int_to_time_text(col: Column) -> Column:
+    """Microseconds since midnight -> ``hh:mm:ss.ffffff`` text.
 
     The write-back direction (reference src/input.rs:767-793 formats
-    TIME_MILLIS as ``hh:mm:ss.fff`` and TIME_MICROS as ``hh:mm:ss.ffffff``).
+    TIME_MICROS as ``hh:mm:ss.ffffff``).
     """
-    scale = _UNIT_SCALE[unit]
-    digits = len(str(scale)) - 1
-    secs = (col / F.lit(scale)).cast("long")
-    frac = (col % F.lit(scale)).cast("long")
+    secs = (col / F.lit(1_000_000)).cast("long")
+    frac = (col % F.lit(1_000_000)).cast("long")
     h = F.lpad((secs / 3600).cast("long").cast("string"), 2, "0")
     m = F.lpad(((secs % 3600) / 60).cast("long").cast("string"), 2, "0")
     s = F.lpad((secs % 60).cast("string"), 2, "0")
-    f_part = F.lpad(frac.cast("string"), digits, "0")
+    f_part = F.lpad(frac.cast("string"), 6, "0")
     return F.concat_ws("", h, F.lit(":"), m, F.lit(":"), s, F.lit("."), f_part)

@@ -76,9 +76,9 @@ def zorder_key(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    bits: int = 10,
 ) -> DataFrame:
-    """Append ``zkey``: the Morton interleave of the range-bucketed pair.
+    """Append ``zkey``: the Morton interleave of the pair, each range-bucketed
+    into 10 bits.
 
     min/max for the bucketing are computed by one tiny aggregate and
     joined back as a broadcast (no driver round-trip in the plan).
@@ -86,11 +86,11 @@ def zorder_key(
     Keys are expected to be INTEGER-DOMAIN (ints, dates-as-days,
     epoch-seconds): the exact-integer cell arithmetic divides the value
     range by (max - min + 1), so a float column whose whole range spans
-    less than ~2^bits units collapses into a few cells and loses
+    less than ~2^10 units collapses into a few cells and loses
     clustering resolution (layout quality, not correctness). Pre-scale
     fractional floats to integers first — e.g.
     ``F.floor(F.col("price") * 100)`` — choosing a multiplier that
-    spreads the range across at least 2^bits units.
+    spreads the range across at least 2^10 units.
     """
     stats = df.agg(
         F.min(x_col).alias("_mnx"),
@@ -98,9 +98,9 @@ def zorder_key(
         F.min(y_col).alias("_mny"),
         F.max(y_col).alias("_mxy"),
     )
-    cx = cell_sql(x_col, "_mnx", "_mxx", bits)
-    cy = cell_sql(y_col, "_mny", "_mxy", bits)
-    z = zorder_sql(cx, cy, bits)
+    cx = cell_sql(x_col, "_mnx", "_mxx", 10)
+    cy = cell_sql(y_col, "_mny", "_mxy", 10)
+    z = zorder_sql(cx, cy, 10)
     return (
         df.crossJoin(F.broadcast(stats))
         .withColumn("zkey", F.expr(z))
@@ -112,18 +112,16 @@ def zorder_bucket_stats(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    bits: int = 10,
-    bucket_bits: int = 6,
 ) -> DataFrame:
-    """Clustering-quality certificate: split the curve into 2^bucket_bits
+    """Clustering-quality certificate: split the 20-bit curve into 2^6
     consecutive runs and report each run's bounding rectangle.
 
-    A correct Z layout yields per-bucket x/y spans near range/2^(b/2) —
+    A correct Z layout yields per-bucket x/y spans near range/2^3 —
     the quantitative form of "min/max pruning now works on both columns".
     Emits (bucket, n_rows, x_min, x_max, y_min, y_max).
     """
-    keyed = zorder_key(df, x_col, y_col, bits)
-    bucket = F.shiftright(F.col("zkey"), 2 * bits - bucket_bits)
+    keyed = zorder_key(df, x_col, y_col)
+    bucket = F.shiftright(F.col("zkey"), 14)
     return (
         keyed.groupBy(bucket.cast("long").alias("bucket"))
         .agg(

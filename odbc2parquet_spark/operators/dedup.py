@@ -170,15 +170,13 @@ def _minhash_keys(bands: int, rows_per_band: int) -> list[F.Column]:
     ]
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame, bands: int = 4, rows_per_band: int = 2, max_bucket: int = 1000
-) -> DataFrame:
-    """Band the signature, bucket on band key, emit distinct id pairs:
-    one (band, key) shuffle through :func:`band_melt` and
+def lsh_candidate_pairs(signatures: DataFrame, max_bucket: int = 1000) -> DataFrame:
+    """Band the signature into 4 bands of 2 min-hashes, bucket on band key,
+    emit distinct id pairs: one (band, key) shuffle through :func:`band_melt` and
     :func:`capped_bucket_pairs`, whose ``max_bucket`` cap drops degenerate
     buckets (the classic LSH skew failure), trading recall for boundedness.
     """
-    melted = band_melt(signatures, F.col("id"), _minhash_keys(bands, rows_per_band))
+    melted = band_melt(signatures, F.col("id"), _minhash_keys(4, 2))
     return capped_bucket_pairs(melted, ["band", "key"], max_bucket, dedupe=True)
 
 
@@ -189,8 +187,9 @@ def lsh_candidate_pairs_multi(
 ) -> DataFrame:
     """Candidate pairs for SEVERAL bandings of one signature in a single
     shuffle: (cfg, id_a, id_b), cfg = "{bands}x{rows}" — exactly the
-    union of the per-config :func:`lsh_candidate_pairs` outputs, which a
-    loop would pay one signature evaluation and one shuffle per config for.
+    union of the per-config banded pairs (what :func:`lsh_candidate_pairs`
+    emits for 4x2), which a loop would pay one signature evaluation and one
+    shuffle per config for.
     """
     keys = {f"{b}x{r}": _minhash_keys(b, r) for b, r in configs}
     melted = band_melt(signatures, F.col("id"), keys)
@@ -319,8 +318,8 @@ def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
     ).mapInArrow(sig_batches, "id long, simhash long")
 
 
-def simhash_near_pairs(sig: DataFrame, max_hamming: int = 6) -> DataFrame:
-    """Pairs within ``max_hamming`` bits — all-pairs VERIFICATION operator.
+def simhash_near_pairs(sig: DataFrame) -> DataFrame:
+    """Pairs within 6 bits — all-pairs VERIFICATION operator.
 
     Quadratic; use on bounded inputs only. The scale path is
     :func:`simhash_banded_pairs`.
@@ -330,7 +329,7 @@ def simhash_near_pairs(sig: DataFrame, max_hamming: int = 6) -> DataFrame:
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .withColumn("hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 6)
         .select("id_a", "id_b", "hamming")
     )
 
@@ -439,9 +438,9 @@ def incremental_minhash_dedup(
     return batch.select("doc_id").join(dropped, "doc_id", "left_anti")
 
 
-def repeated_ngram_stats(docs: DataFrame, n: int = 8) -> DataFrame:
+def repeated_ngram_stats(docs: DataFrame) -> DataFrame:
     """Substring-level duplication stats (the Lee et al. "Deduplicating
-    Training Data Makes Language Models Better" signal): word n-grams
+    Training Data Makes Language Models Better" signal): word 8-grams
     recurring across >= 2 DISTINCT documents, reported per
     document as (doc_id, n_grams, n_dup_grams, dup_frac).
 
@@ -455,15 +454,15 @@ def repeated_ngram_stats(docs: DataFrame, n: int = 8) -> DataFrame:
     gram hash: a countDistinct(doc) to find cross-doc grams (partial
     map-side aggregation) and a semi-join back. The gram string itself is
     never shuffled — only its truncated md5 — so shuffle rows stay narrow
-    regardless of n. At corpus scale the cross-doc gram set is the long
-    tail's complement: small enough to behave like a dimension side under
-    AQE.
+    regardless of the gram length. At corpus scale the cross-doc gram set
+    is the long tail's complement: small enough to behave like a
+    dimension side under AQE.
     """
-    parts = [f"ws[i - 1 + {k}]" for k in range(n)]
+    parts = [f"ws[i - 1 + {k}]" for k in range(8)]
     # NB: sequence(1, 0) is DESCENDING, not empty — short docs short-circuit.
     gram_expr = (
-        f"CASE WHEN size(ws) < {n} THEN array() ELSE "
-        f"transform(sequence(1, size(ws) - {n - 1}), "
+        "CASE WHEN size(ws) < 8 THEN array() ELSE "
+        "transform(sequence(1, size(ws) - 7), "
         f"i -> substring(md5(concat_ws(' ', {', '.join(parts)})), 1, 16)) END"
     )
     grams = (
@@ -720,7 +719,6 @@ def span_scrub(docs: DataFrame) -> DataFrame:
 def prefix_jaccard_pairs(
     shingles: DataFrame,
     threshold: float = 0.8,
-    bucket_cap: int | None = None,
 ) -> DataFrame:
     """Exact set-similarity self-join by PREFIX FILTERING (Chaudhuri et
     al. 2006 / PPJoin family): all document pairs whose shingle-set
@@ -743,19 +741,6 @@ def prefix_jaccard_pairs(
     — never corpus x corpus). Exact integer counting until one final
     Jaccard division, ROUND 6; recall 1.0 is the contract the
     probabilistic path (dd_minhash_lsh) trades away.
-
-    ``bucket_cap`` is the VERIFICATION BUDGET for pathologically
-    duplicative corpora (the same drop semantics as the LSH bucket
-    caps): when set, each prefix-shingle bucket keeps only its
-    ``bucket_cap`` members ranked by (sz, id) — smallest, lowest-id
-    docs first, deterministic — and overflow members lose that bucket
-    as a candidate source. A pair is missed ONLY if every prefix
-    shingle the two docs share is over-full past one of them; since
-    bucket overflow is precisely concentrated duplicate mass, the
-    survivors still chain through their remaining rare-prefix buckets
-    in practice. Precision is untouched (the verification join stays
-    exact), and ``None`` (the default — what every registered query
-    uses) preserves the recall-1.0 contract unchanged.
     """
     # shingles travel as 60-bit md5 hashes from here on — df counting,
     # ranking, bucket joins and the verification arrays all shuffle longs,
@@ -809,13 +794,6 @@ def prefix_jaccard_pairs(
     ).cast("long")
     prefix_len = F.col("sz") - ceil_t_sz + 1
     prefix = sized.filter(F.col("rn") <= prefix_len).select("id", "gh", "sz", "rn")
-    if bucket_cap is not None:
-        wb = Window.partitionBy("gh").orderBy("sz", "id")
-        prefix = (
-            prefix.withColumn("_bn_", F.row_number().over(wb))
-            .filter(F.col("_bn_") <= bucket_cap)
-            .drop("_bn_")
-        )
     a, b = prefix.alias("a"), prefix.alias("b")
     # positional filter (the PPJoin refinement over plain prefix
     # filtering): a match at prefix positions (rn_a, rn_b) caps the
@@ -918,9 +896,9 @@ def winnowing_fingerprints(docs: DataFrame) -> DataFrame:
     ).distinct()
 
 
-def winnowing_pairs(fingerprints: DataFrame, min_shared: int = 2) -> DataFrame:
+def winnowing_pairs(fingerprints: DataFrame) -> DataFrame:
     """(id_a, id_b, n_shared): document pairs sharing at least
-    ``min_shared`` distinct winnowing fingerprint hashes — the MOSS
+    2 distinct winnowing fingerprint hashes — the MOSS
     match stage. Pairs come from similarity.capped_bucket_pairs with the
     hash as the bucket and the standard stop-fingerprint cap: a hash in
     more than 64 docs (template/boilerplate mass) is
@@ -931,7 +909,7 @@ def winnowing_pairs(fingerprints: DataFrame, min_shared: int = 2) -> DataFrame:
         capped_bucket_pairs(fp, ["h"], 64)
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+        .filter(F.col("n_shared") >= 2)
     )
 
 

@@ -6,7 +6,7 @@ answerable without sampling to the driver. These operators compute the
 standard drift / discrimination statistics (PSI, Kolmogorov-Smirnov D,
 ROC-AUC, Gini concentration, chi-square independence) as pure DataFrame
 plans whose only driver traffic is per-partition partial sums
-(``prefix_sums``: num_partitions longs, never data).
+(``prefix_sums``: 32 longs, never data).
 
 Scale shapes (each documented per function):
 
@@ -39,7 +39,6 @@ def prefix_sums(
     df: DataFrame,
     order_cols: list[str],
     sum_cols: list[str],
-    num_partitions: int = 32,
     boundary_source: tuple[DataFrame, str] | None = None,
     with_totals: bool = False,
 ) -> DataFrame:
@@ -49,7 +48,7 @@ def prefix_sums(
 
     Bucketing is the literal-boundary scheme of operators/bucketing.py:
     a one-off approx-quantile pass embeds monotone bucket boundaries as
-    plan literals, so pass 1 (per-bucket sums — num_partitions ×
+    plan literals, so pass 1 (per-bucket sums — 32 buckets ×
     len(sum_cols) longs to the driver, never data) and pass 2 (bucket
     offset + bucket-local running sum) recompute identical buckets from
     the source scan. Nothing is persisted, checkpointed, or pinned —
@@ -78,10 +77,10 @@ def prefix_sums(
     if boundary_source is not None:
         proxy_df, proxy_col = boundary_source
         bucket = order_bucket_col(
-            proxy_df, proxy_col, num_partitions, apply_col=order_cols[0]
+            proxy_df, proxy_col, 32, apply_col=order_cols[0]
         )
     else:
-        bucket = order_bucket_col(df, order_cols[0], num_partitions)
+        bucket = order_bucket_col(df, order_cols[0], 32)
     with_pid = df.withColumn("_pid_", bucket)
     offsets, grand = bucket_offsets(with_pid, sum_cols)
     if not offsets[sum_cols[0]]:
@@ -753,41 +752,32 @@ def weighted_median(df: DataFrame, value_col: str, weight_col: str) -> DataFrame
     )
 
 
-def seasonal_decompose(daily: DataFrame, period: int = 7) -> DataFrame:
+def seasonal_decompose(daily: DataFrame) -> DataFrame:
     """Classical additive seasonal decomposition of a daily series:
     value = trend + seasonal + residual (Cleveland's STL ancestor — the
     moving-average decomposition of Macaulay '31; statsmodels'
-    ``seasonal_decompose`` is the same recipe).
+    ``seasonal_decompose`` is the same recipe), over a weekly period of 7
+    days.
 
     ``daily`` must be one row per ``day`` (a long epoch-day or date)
     with ``val_dec`` an EXACT decimal (order-insensitive sums upstream).
 
     Determinism contract (hash-matchable across engines): every mean is a
     single IEEE division of an exact-decimal numerator — trend is the
-    centered ``period``-window sum / period, the seasonal index is the
-    per-phase sum of (period * value - window_sum) / (period * n_phase) —
+    centered 7-day window sum / 7, the seasonal index is the
+    per-phase sum of (7 * value - window_sum) / (7 * n_phase) —
     so no floating-point ACCUMULATION happens anywhere; both engines
     divide identical exact numbers in identical token order. Rows without
-    a full centered window (the series' first/last period/2 days) are
+    a full centered window (the series' first/last 3 days) are
     dropped, as in statsmodels.
 
     Scale shape: the input is already aggregated to one row per day, so
     the unpartitioned centered window is bounded by the calendar (3.6k
     rows per decade) — a final fold, not a data-sized window; the phase
-    index is a ``period``-row broadcast join.
+    index is a 7-row broadcast join.
     """
-    if period < 3 or period % 2 == 0:
-        # an even period's centered window spans period+1 rows, so the
-        # full-window filter (_n_ == period) would silently drop EVERY
-        # row; classical decomposition needs the 2×m double-MA there,
-        # which this single-MA recipe deliberately does not implement
-        raise ValueError(
-            f"period must be an odd integer >= 3 (got {period}); even "
-            "periods need the 2xm centered moving average"
-        )
-    half = period // 2
-    w = Window.orderBy("day").rowsBetween(-half, half)
-    p = F.lit(period)
+    w = Window.orderBy("day").rowsBetween(-3, 3)
+    p = F.lit(7)
     full = (
         daily.withColumn("_n_", F.count("*").over(w))
         .withColumn("_s_", F.sum("val_dec").over(w))
@@ -870,14 +860,21 @@ def embedding_centroid_shift(a: DataFrame, b: DataFrame) -> DataFrame:
     return per_dim.unionAll(summary)
 
 
+def _daily_counts(events: DataFrame, ts_col: str, group_col: str) -> DataFrame:
+    """(g, day, c): events per group and calendar day, the series
+    :func:`acf_daily` and :func:`theil_sen_daily` start from."""
+    return events.groupBy(
+        F.col(group_col).alias("g"), F.to_date(ts_col).alias("day")
+    ).agg(F.count("*").alias("c"))
+
+
 def acf_daily(
     events: DataFrame,
     ts_col: str,
     group_col: str,
-    max_lag: int = 7,
 ) -> DataFrame:
     """(group, lag, n_days, acf6): autocorrelation of the daily event-count
-    series at lags 1..max_lag — the seasonality detector a monitoring
+    series at lags 1..7 — the seasonality detector a monitoring
     pipeline runs BEFORE choosing a seasonal window (a strong lag-7 spike
     says "weekly rhythm; deseasonalize with period 7", a flat tail says
     the series is noise and STL would overfit).
@@ -894,12 +891,7 @@ def acf_daily(
     everything after runs on calendar-sized frames (per-group lag window
     + one aggregation), so cost rides the scan regardless of data size.
     """
-    daily = (
-        events.groupBy(
-            F.col(group_col).alias("g"), F.to_date(ts_col).alias("day")
-        )
-        .agg(F.count("*").alias("c"))
-    )
+    daily = _daily_counts(events, ts_col, group_col)
     tot = daily.groupBy("g").agg(
         F.count("*").alias("n_days"), F.sum("c").alias("t")
     )
@@ -908,7 +900,7 @@ def acf_daily(
         "g",
         "day",
         "c",
-        *[F.lag("c", k).over(w).alias(f"c{k}") for k in range(1, max_lag + 1)],
+        *[F.lag("c", k).over(w).alias(f"c{k}") for k in range(1, 8)],
     ).join(tot, "g")
     dev = lagged.select(
         "g",
@@ -916,14 +908,14 @@ def acf_daily(
         (F.col("n_days") * F.col("c") - F.col("t")).alias("d0"),
         *[
             (F.col("n_days") * F.col(f"c{k}") - F.col("t")).alias(f"d{k}")
-            for k in range(1, max_lag + 1)
+            for k in range(1, 8)
         ],
     )
     agg = dev.groupBy("g", "n_days").agg(
         F.sum(F.col("d0") * F.col("d0")).alias("den"),
         *[
             F.sum(F.col("d0") * F.col(f"d{k}")).alias(f"num{k}")
-            for k in range(1, max_lag + 1)
+            for k in range(1, 8)
         ],
     )
     lags = F.array(
@@ -932,7 +924,7 @@ def acf_daily(
                 F.lit(k).cast("int").alias("lag"),
                 F.col(f"num{k}").alias("num"),
             )
-            for k in range(1, max_lag + 1)
+            for k in range(1, 8)
         ]
     )
     return (
@@ -967,12 +959,7 @@ def theil_sen_daily(
     decade of days is ~6.7M pairs), independent of corpus row count. The
     rank pick is a per-group window over those bounded pairs.
     """
-    daily = (
-        events.groupBy(
-            F.col(group_col).alias("g"), F.to_date(ts_col).alias("day")
-        )
-        .agg(F.count("*").alias("c"))
-    )
+    daily = _daily_counts(events, ts_col, group_col)
     t = daily.select(
         "g",
         "c",
@@ -1001,8 +988,8 @@ def theil_sen_daily(
     return n_days.join(picked, "g").select("g", "n_days", "n_pairs", "slope_med")
 
 
-def pca_top_component(vectors: DataFrame, dim: int = 64) -> DataFrame:
-    """(i, pc1_milli, lambda6): leading principal component of an
+def pca_top_component(vectors: DataFrame) -> DataFrame:
+    """(i, pc1_milli, lambda6): leading principal component of a 64-wide
     embedding column by POWER ITERATION on the exact-integer covariance
     matrix — the embedding-QA decomposition (how much variance one
     direction explains; whitening and drift diagnostics start here).
@@ -1040,7 +1027,7 @@ def pca_top_component(vectors: DataFrame, dim: int = 64) -> DataFrame:
     import decimal
     import math
 
-    cov_rows = covariance_matrix(vectors, dim=dim).collect()
+    cov_rows = covariance_matrix(vectors, dim=64).collect()
     spark = vectors.sparkSession
     schema = "i LONG, pc1_milli LONG, lambda6 DOUBLE"
     if not cov_rows:

@@ -30,10 +30,10 @@ def target_encode_loo(
     df: DataFrame,
     cat_col: str,
     target_col: str,
-    prior_weight: float = 20.0,
 ) -> DataFrame:
     """Adds ``enc_loo`` to ``df``: the smoothed leave-one-out target
-    encoding (sum_cat - x + w * global_mean) / (n_cat - 1 + w).
+    encoding (sum_cat - x + w * global_mean) / (n_cat - 1 + w), prior
+    weight w = 20.
 
     Categories with a single row fall back to the prior alone (the
     numerator keeps only the global-mean term; denominator is w), which
@@ -46,8 +46,8 @@ def target_encode_loo(
     glob = df.agg(F.sum(dec).alias("_gs_"), F.count("*").alias("_gn_"))
     enc = (
         (F.col("_s_cat_") - dec).cast("double")
-        + F.lit(prior_weight) * (F.col("_gs_").cast("double") / F.col("_gn_"))
-    ) / (F.col("_n_cat_") - 1 + F.lit(prior_weight))
+        + F.lit(20.0) * (F.col("_gs_").cast("double") / F.col("_gn_"))
+    ) / (F.col("_n_cat_") - 1 + F.lit(20.0))
     return (
         df.join(F.broadcast(cat_stats), cat_col)
         .crossJoin(F.broadcast(glob))

@@ -357,9 +357,8 @@ def _rank_walk(
     seed: DataFrame,
     floor: DataFrame,
     keep: Column,
-    iterations: int,
 ) -> DataFrame:
-    """The rank push shared by :func:`pagerank_int` and
+    """The 3-round rank push shared by :func:`pagerank_int` and
     :func:`personalized_pagerank_int`. Each round is one groupBy(id) over
     the union of the contribution rows (dst, rank div out_deg) and
     ``floor``'s (id, f) rows, the constant term of each node that has one;
@@ -386,13 +385,11 @@ def _rank_walk(
             .select("id", "rank")
         )
 
-    return _fixpoint(seed, step, iterations)
+    return _fixpoint(seed, step, 3)
 
 
-def pagerank_int(
-    nodes: DataFrame, weighted: DataFrame, n_nodes: int, iterations: int = 3
-) -> DataFrame:
-    """Fixed-iteration PageRank in exact integer micro-units
+def pagerank_int(nodes: DataFrame, weighted: DataFrame, n_nodes: int) -> DataFrame:
+    """Three-round PageRank in exact integer micro-units
     (rank x 10^12 as int64) — bit-identical on any engine.
 
     Floating-point PageRank is order-sensitive (per-node sums over
@@ -408,21 +405,17 @@ def pagerank_int(
     ``weighted`` is the graph as an :func:`out_degree_weighted` list.
     ``n_nodes`` is N, the row count of ``nodes``; the caller supplies it
     (a parquet scan's footers hold it, ``catalog.footer_row_count``), so
-    building the walk runs no Spark job, and a walk of at most
-    ``_TRUNCATE_EVERY`` rounds comes back as one lazy plan.
+    building the walk runs no Spark job, and its 3 rounds, fewer than
+    ``_TRUNCATE_EVERY``, come back as one lazy plan.
     """
     base = (10**12) // n_nodes
     ids = nodes.select("id")
     floor = ids.select("id", F.lit((15 * base) // 100).alias("f"))
     seed = ids.select("id", F.lit(base).alias("rank"))
-    return _rank_walk(weighted, seed, floor, F.col("f").isNotNull(), iterations)
+    return _rank_walk(weighted, seed, floor, F.col("f").isNotNull())
 
 
-def personalized_pagerank_int(
-    weighted: DataFrame,
-    seeds: DataFrame,
-    iterations: int = 3,
-) -> DataFrame:
+def personalized_pagerank_int(weighted: DataFrame, seeds: DataFrame) -> DataFrame:
     """Personalized PageRank (random walk with restart to a SEED set) in
     exact integer micro-units — the "more like these" expansion primitive:
     given a small curated seed set, rank the rest of the corpus by
@@ -449,7 +442,7 @@ def personalized_pagerank_int(
     )
     floor = based.select("id", F.expr("(15 * base) div 100").alias("f"))
     seed = based.select("id", F.col("base").alias("rank"))
-    return _rank_walk(weighted, seed, floor, F.col("rank") > 0, iterations)
+    return _rank_walk(weighted, seed, floor, F.col("rank") > 0)
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -486,7 +479,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     )
 
 
-def tree_ancestry(edges: DataFrame, rounds: int = 8) -> DataFrame:
+def tree_ancestry(edges: DataFrame) -> DataFrame:
     """Root and depth for every node of a forest — the recursive-CTE
     workload (org charts, category trees, BOM explosion) Spark SQL has
     no operator for, computed in O(log depth) self-joins by pointer
@@ -499,12 +492,11 @@ def tree_ancestry(edges: DataFrame, rounds: int = 8) -> DataFrame:
     composition join is inner); validate upstream if the hierarchy may
     be truncated. Invariant per round: state(x) = (cur, d) means cur is x's
     2^k-th ancestor (clamped at its root) and d the real hop count to
-    it. Doubling composes the state with itself — after ``rounds``
-    rounds every node whose depth is <= 2^rounds has cur = its root and
-    d = its depth (256 deep by default: any realistic hierarchy; raise
-    ``rounds`` logarithmically for pathological chains). The round count
-    is a fixed limit, not a convergence test: deeper nodes come back
-    part-way up their chain.
+    it. Doubling composes the state with itself — after its 8 rounds
+    every node whose depth is <= 2^8 = 256 has cur = its root and d = its
+    depth (any realistic hierarchy). The round count is a fixed limit,
+    not a convergence test: deeper nodes come back part-way up their
+    chain.
 
     Scale shape: each round is ONE equi-join of the state with itself on
     the node key — 8 narrow shuffles total regardless of depth.
@@ -532,7 +524,7 @@ def tree_ancestry(edges: DataFrame, rounds: int = 8) -> DataFrame:
             (F.col("depth") + F.col("j_depth")).alias("depth"),
         )
 
-    state = _fixpoint(seed, step, rounds, reads_twice=True)
+    state = _fixpoint(seed, step, 8, reads_twice=True)
     return state.select("node", F.col("cur").alias("root_key"), "depth")
 
 
@@ -585,18 +577,18 @@ def k_core(edges: DataFrame, k: int) -> DataFrame:
     return _degrees(_fixpoint(seed, step, 50, peeled_nothing, name="k_core"))
 
 
-def hits_int(nodes: DataFrame, edges: DataFrame, rounds: int = 2) -> DataFrame:
-    """(id, hub, auth): fixed-round HITS in exact unnormalized int64.
+def hits_int(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """(id, hub, auth): two-round HITS in exact unnormalized int64.
 
     Kleinberg's mutual-reinforcement pair — hub(i) = sum of auth over
     i's out-neighbors, auth(j) = sum of hub over j's in-neighbors —
-    seeded at auth = 1 and run for a fixed number of full (hub, auth)
+    seeded at auth = 1 and run for 2 full (hub, auth)
     rounds WITHOUT the usual L2 normalization. Dropping the
     normalization is what makes the scores exact integers (every update
     is a sum of int64s), so two engines agree bit-for-bit; the rank
     order each round is identical to the normalized iterate because
     normalization is a positive scalar. Growth is bounded by
-    max_degree^(2*rounds) — with the LSH similarity graph's capped
+    max_degree^4 — with the LSH similarity graph's capped
     bucket degrees, 2 rounds stay far inside int64 even at corpus
     scale (deg 200 -> 1.6e9).
 
@@ -629,10 +621,10 @@ def hits_int(nodes: DataFrame, edges: DataFrame, rounds: int = 2) -> DataFrame:
         "id", F.lit(0).cast("long").alias("hub"), F.lit(1).cast("long").alias("auth")
     )
     sym = edges.select("src", "dst")
-    return _fixpoint(seed, step, rounds, edges=sym, reads_twice=True)
+    return _fixpoint(seed, step, 2, edges=sym, reads_twice=True)
 
 
-def label_propagation_int(nodes: DataFrame, edges: DataFrame, rounds: int = 3) -> DataFrame:
+def label_propagation_int(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """(id, label): synchronous label-propagation communities with a
     deterministic tie-break — the cheap community detector (Raghavan et
     al.) curation runs on a similarity graph to find topical groups
@@ -643,8 +635,8 @@ def label_propagation_int(nodes: DataFrame, edges: DataFrame, rounds: int = 3) -
     smallest label — the tie-break that makes the classical randomized
     update deterministic and engine-independent). Isolated nodes keep
     their own label. Updates are synchronous (all nodes read the
-    previous round's labels), so the result is a pure function of the
-    edge set and the round count — exactly reproducible by an unrolled
+    previous round's labels), so the result of the 3 rounds is a pure
+    function of the edge set — exactly reproducible by an unrolled
     SQL oracle, unlike the asynchronous variant whose result depends on
     visit order.
 
@@ -689,7 +681,7 @@ def label_propagation_int(nodes: DataFrame, edges: DataFrame, rounds: int = 3) -
 
     seed = ids.select("id", F.col("id").alias("label"))
     sym = edges.select("src", "dst")
-    return _fixpoint(seed, step, rounds, edges=sym, reads_twice=True)
+    return _fixpoint(seed, step, 3, edges=sym, reads_twice=True)
 
 
 def clustering_coefficient(edges: DataFrame) -> DataFrame:

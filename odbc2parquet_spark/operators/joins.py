@@ -5,8 +5,8 @@ splitting oversized partitions. These helpers cover what it can't:
 
 - ``salted_join``: one key so hot that even a split partition's *build* side
   explodes (e.g. joining events to a dimension where 40% of rows share one
-  key). Salting multiplies the small side by ``salt`` and spreads the big
-  side's hot key across ``salt`` reducers — bounded memory per task by
+  key). Salting multiplies the small side by 16 and spreads the big
+  side's hot key across 16 reducers — bounded memory per task by
   construction, at the cost of replicating the small side.
 - ``skew_profile``: which keys would melt a reducer, and the salt that
   re-balances each.
@@ -28,32 +28,23 @@ def salted_join(
     big: DataFrame,
     small: DataFrame,
     key: str,
-    how: str = "inner",
-    salt: int = 16,
     distribute_by: str | None = None,
 ) -> DataFrame:
-    """Equi-join with the big side's hot keys spread across ``salt`` buckets.
+    """Inner equi-join with the big side's hot keys spread across 16 buckets.
 
     The big side gets a deterministic salt from ``distribute_by`` (a
     high-cardinality column; defaults to a hash of the whole row) so one
-    join key lands in ``salt`` different reducers; the small side is
-    replicated once per salt value (explode of a ``salt``-element array —
-    rows x salt, fine for dimension-sized inputs). Result equals
-    ``big.join(small, key, how)`` exactly.
-
-    Supported ``how``: inner / left — the shapes where the small side is a
-    lookup table. (Right/full would need the small side un-duplicated on
-    no-match; use the plain join + AQE there.)
+    join key lands in 16 different reducers; the small side, a lookup
+    table, is replicated once per salt value (explode of a 16-element
+    array — rows x 16, fine for dimension-sized inputs). Result equals
+    ``big.join(small, key)`` exactly.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
     dist = F.col(distribute_by) if distribute_by else F.hash(*[F.col(c) for c in big.columns])
-    b = big.withColumn("__salt", F.pmod(F.hash(dist), F.lit(salt)))
+    b = big.withColumn("__salt", F.pmod(F.hash(dist), F.lit(16)))
     s = small.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
+        "__salt", F.explode(F.array(*[F.lit(i) for i in range(16)]))
     )
-    out = b.join(s, [key, "__salt"], how)
-    return out.drop("__salt")
+    return b.join(s, [key, "__salt"]).drop("__salt")
 
 
 def _argmin_match(scored: DataFrame) -> DataFrame:
@@ -161,17 +152,17 @@ def deletion_blocked_fuzzy_match(
     )
 
 
-def skew_profile(df: DataFrame, key_col: str, top_n: int = 5, parallelism: int = 32) -> DataFrame:
+def skew_profile(df: DataFrame, key_col: str) -> DataFrame:
     """Shuffle-skew diagnostic for a prospective join/groupBy key: the
-    ``top_n`` hottest keys with their share of all rows and the salt
-    factor that would re-balance each across ``parallelism`` reducers.
+    5 hottest keys with their share of all rows and the salt
+    factor that would re-balance each across 32 reducers.
 
     At 100 TB the first question before any keyed operation is "which keys
     melt a reducer"; this answers it with one map-side-combined count and
-    a TakeOrdered top-n (top_n rows to the driver-side reduce — never the
-    key histogram itself). ``suggested_salt`` = ceil(cnt * parallelism /
+    a TakeOrdered top-5 (5 rows to the driver-side reduce — never the
+    key histogram itself). ``suggested_salt`` = ceil(cnt * 32 /
     total): 1 means the key fits an average reducer, s > 1 means split it
-    into s sub-keys (the :func:`salted_join` fan-out parameter).
+    into s sub-keys (:func:`salted_join` fans out to 16).
 
     All emitted ratios are exact-integer divisions cast to double, so an
     external engine reproduces them bit-for-bit. The key is emitted as a
@@ -187,7 +178,7 @@ def skew_profile(df: DataFrame, key_col: str, top_n: int = 5, parallelism: int =
         F.count("*").cast("long").alias("n_keys"),
         F.sum("cnt").cast("long").alias("total_rows"),
     )
-    top = counts.orderBy(F.desc("cnt"), F.asc("key")).limit(top_n)
+    top = counts.orderBy(F.desc("cnt"), F.asc("key")).limit(5)
     w = Window.orderBy(F.desc("cnt"), F.asc("key"))
     return (
         top.crossJoin(F.broadcast(stats))
@@ -201,7 +192,7 @@ def skew_profile(df: DataFrame, key_col: str, top_n: int = 5, parallelism: int =
             (F.col("cnt") * F.col("n_keys") / F.col("total_rows"))
             .cast("double")
             .alias("skew_ratio"),
-            F.ceil(F.col("cnt") * F.lit(parallelism) / F.col("total_rows"))
+            F.ceil(F.col("cnt") * F.lit(32) / F.col("total_rows"))
             .cast("long")
             .alias("suggested_salt"),
         )
@@ -213,7 +204,6 @@ def bloom_semi_join(
     small: DataFrame,
     big_key: str,
     small_key: str,
-    m_bits: int = 4096,
 ) -> DataFrame:
     """Semi-join with a Bloom runtime filter: build a compact bitset from
     the small side's keys, pre-filter the big side AT THE SCAN (broadcast
@@ -224,19 +214,18 @@ def bloom_semi_join(
 
     This is the optimization that matters at 100 TB: the big side's
     shuffle volume drops to (true matches + false-positive rate), while
-    the filter itself costs one broadcast of m_bits/32 longs. Spark's own
+    the filter itself costs one broadcast of 4096/32 longs. Spark's own
     runtime-filter rule does this opportunistically; making it an
-    explicit operator pins the semantics and lets the pipeline author
-    size m for the expected key cardinality.
+    explicit operator pins the semantics.
 
-    Hash family: md5 two-hash (h1 + j*h2) mod m — the oracle-reproducible
+    Hash family: md5 two-hash (h1 + j*h2) mod 4096 — the oracle-reproducible
     family every sketch in this repo uses.
     """
     def positions(key_col: F.Column) -> F.Column:
         hexd = F.md5(key_col.cast("string"))
         h1 = F.conv(F.substring(hexd, 1, 15), 16, 10).cast("long")
         h2 = F.conv(F.substring(hexd, 16, 15), 16, 10).cast("long")
-        return F.array(*[((h1 + F.lit(j) * h2) % m_bits) for j in range(3)])
+        return F.array(*[((h1 + F.lit(j) * h2) % 4096) for j in range(3)])
 
     bloom = (
         small.select(F.explode(positions(F.col(small_key))).alias("p"))
@@ -257,7 +246,7 @@ def bloom_semi_join(
     probe = big
     conds = []
     for j in range(3):
-        pos = (h1 + F.lit(j) * h2) % m_bits
+        pos = (h1 + F.lit(j) * h2) % 4096
         bj = bloom.withColumnsRenamed({"word": f"_w{j}", "bits": f"_bits{j}"})
         probe = probe.withColumn(f"_p{j}", pos).join(
             F.broadcast(bj),

@@ -271,8 +271,8 @@ RESIZE_SCHEMA = (
 )
 
 
-def resize_images(binary_df: DataFrame, target_w: int = 16, target_h: int = 12) -> DataFrame:
-    """'Resize' each binary payload to a fixed target_w x target_h buffer.
+def resize_images(binary_df: DataFrame) -> DataFrame:
+    """'Resize' each binary payload to a fixed 16 x 12 RGB buffer.
 
     Real pipeline shape: mapInPandas over (id, payload) with the resized
     payload returned as a binary column (so downstream stages keep
@@ -281,12 +281,10 @@ def resize_images(binary_df: DataFrame, target_w: int = 16, target_h: int = 12) 
     byte-cycled to the target size, which the oracle recomputes; no
     header is parsed.
     """
-    target = target_w * target_h * 3
-
     def rows(doc_id, p: bytes) -> list[tuple]:
-        resized = _cycle(p, target)
+        resized = _cycle(p, 16 * 12 * 3)
         checksum = sum(resized) % 1_000_000_007
-        return [(doc_id, target_w, target_h, target, checksum, bytearray(resized))]
+        return [(doc_id, 16, 12, 16 * 12 * 3, checksum, bytearray(resized))]
 
     return _map_payloads(binary_df, RESIZE_SCHEMA, rows)
 
@@ -615,21 +613,19 @@ def _nearest(px: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
 RESIZE_REAL_SCHEMA = "doc_id long, out_w int, out_h int, digest string"
 
 
-def resize_bmp_nearest(
-    binary_df: DataFrame, out_w: int = 4, out_h: int = 3
-) -> DataFrame:
-    """Nearest-neighbor resize on TRUE BMP pixels (no codec needed):
-    decode the padded pixel grid, sample src_y = r*h // out_h,
-    src_x = c*w // out_w per output cell, and emit an order-sensitive
+def resize_bmp_nearest(binary_df: DataFrame) -> DataFrame:
+    """Nearest-neighbor resize to 4 x 3 on TRUE BMP pixels (no codec needed):
+    decode the padded pixel grid, sample src_y = r*h // 3,
+    src_x = c*w // 4 per output cell, and emit an order-sensitive
     digest of the sampled B,G,R bytes (md5 over the comma-joined byte
     values in (r, c, ch) order) — scalar and hashable, so a SQL oracle
     that reconstructs the same sampled bytes can pin every pixel the
     resize touched. Corrupt payloads quarantine as NULL rows."""
 
     def rows(doc_id, p: bytes) -> list[tuple]:
-        sampled = _nearest(_bmp_pixels(p), out_h, out_w)
+        sampled = _nearest(_bmp_pixels(p), 3, 4)
         joined = ",".join(map(str, sampled.reshape(-1).tolist()))
-        return [(doc_id, out_w, out_h, hashlib.md5(joined.encode()).hexdigest())]
+        return [(doc_id, 4, 3, hashlib.md5(joined.encode()).hexdigest())]
 
     return _map_payloads(binary_df, RESIZE_REAL_SCHEMA, rows)
 

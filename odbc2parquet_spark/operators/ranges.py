@@ -29,16 +29,10 @@ def range_join(
     start_col: str,
     end_col: str,
     bin_width: float,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join each point row to every interval row with
+    """Inner-join each point row to every interval row with
     ``start_col <= point_col < end_col`` (half-open).
-
-    ``how`` may be ``inner`` or ``left`` (left keeps pointless rows with
-    null interval columns).
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"range_join supports inner/left, got {how!r}")
     bw = F.lit(bin_width)
     # Empty/inverted intervals (end <= start) can never match a point under
     # the half-open predicate, but Spark's sequence(a, b) is DESCENDING for
@@ -67,15 +61,13 @@ def range_join(
         & (binned_points[point_col] >= binned_intervals[start_col])
         & (binned_points[point_col] < binned_intervals[end_col])
     )
-    joined = binned_points.join(binned_intervals, on, how)
-    return joined.drop("__bin")
+    return binned_points.join(binned_intervals, on).drop("__bin")
 
 
 def sweep_line_concurrency(
     intervals: DataFrame,
     start_col: str,
     end_col: str,
-    num_partitions: int = 32,
     boundary_source: tuple[DataFrame, str] | None = None,
 ) -> DataFrame:
     """Interval-overlap counting by sweep line: every interval emits a
@@ -90,8 +82,8 @@ def sweep_line_concurrency(
     the literal-boundary scheme of operators/bucketing.py (a one-off
     approx-quantile pass on the sweep key; bucket boundaries become plan
     literals so both passes recompute identical buckets — nothing
-    persisted or pinned). Per-partition sums come to the driver
-    [num_partitions longs, never data]; the final pass adds the bucket
+    persisted or pinned). Per-bucket sums come to the driver
+    [32 longs, never data]; the final pass adds the bucket
     offset to a bucket-local cumsum. Per-day maxima downstream are
     order-invariant within a tie group (equal (t, delta) rows
     interchange without changing any group's max), so the output is
@@ -122,7 +114,6 @@ def sweep_line_concurrency(
         pts,
         ["t", "delta"],
         ["delta"],
-        num_partitions,
         boundary_source=boundary_source,
     )
     return cum.select("t", "delta", F.col("c_delta").alias("concurrency"))

@@ -17,14 +17,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-#: supported bucket widths, seconds
+#: bucket widths :func:`coarsen` re-aggregates to, seconds
 GRANULARITIES = {"5 minutes": 300, "1 hour": 3600, "1 day": 86400}
 
 
-def bucket_aggregate(events: DataFrame, width: str = "5 minutes") -> DataFrame:
-    """Finest-level aggregate from raw events: (bucket_start, key, n, sum)."""
-    secs = GRANULARITIES[width]
-    bucket = (F.unix_seconds(F.col("ts").cast("timestamp")) / secs).cast("long") * secs
+def bucket_aggregate(events: DataFrame) -> DataFrame:
+    """Finest-level aggregate from raw events, 5-minute buckets:
+    (bucket_start, key, n, sum)."""
+    bucket = (F.unix_seconds(F.col("ts").cast("timestamp")) / 300).cast("long") * 300
     return events.groupBy(
         bucket.alias("bucket_start"), F.col("event_type").alias("key")
     ).agg(
@@ -56,9 +56,9 @@ def rollup_cascade(events: DataFrame) -> dict[str, DataFrame]:
     return out
 
 
-def resample_forward_fill(events: DataFrame, bucket_seconds: int = 86400) -> DataFrame:
+def resample_forward_fill(events: DataFrame) -> DataFrame:
     """Regular-grid resampling with forward fill: for every key, one row
-    per ``bucket_seconds`` bucket from its first to its last event, carrying
+    per day bucket from its first to its last event, carrying
     the most recent observed value at or before the bucket's end (the
     gap-filling step dashboards and feature pipelines need before joining
     irregular event streams to anything gridded).
@@ -70,13 +70,12 @@ def resample_forward_fill(events: DataFrame, bucket_seconds: int = 86400) -> Dat
     running last(ignorenulls) window per key, ordered by bucket — state
     bounded per key, no shuffle beyond the two keyed windows.
     """
-    us = int(bucket_seconds) * 1_000_000
     ev = events.select(
         F.col("user_id").alias("key"),
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
         F.col("event_id").alias("id"),
         F.col("value").alias("v"),
-    ).withColumn("bucket", F.floor(F.col("ts_us") / F.lit(us)).cast("long"))
+    ).withColumn("bucket", F.floor(F.col("ts_us") / F.lit(86_400_000_000)).cast("long"))
     bounds = ev.groupBy("key").agg(
         F.min("bucket").alias("b0"), F.max("bucket").alias("b1")
     )
@@ -151,7 +150,7 @@ def merge_agg_states(a: DataFrame, b: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-def resample_interpolate(events: DataFrame, bucket_seconds: int = 86400) -> DataFrame:
+def resample_interpolate(events: DataFrame) -> DataFrame:
     """Regular-grid resampling with LINEAR interpolation: gap buckets get
     ``vp + (vn - vp) * (b - bp) / (bn - bp)`` between the neighboring
     observations; leading/trailing gaps fall back to back/forward fill.
@@ -163,9 +162,7 @@ def resample_interpolate(events: DataFrame, bucket_seconds: int = 86400) -> Data
     last backward, running first forward). The interpolation itself is
     arithmetic on already-joined rows — no extra shuffle.
     """
-    base = resample_forward_fill(
-        events, bucket_seconds
-    ).select(
+    base = resample_forward_fill(events).select(
         F.col("user_id").alias("key"),
         "bucket",
         F.when(F.col("observed"), F.col("filled_value")).alias("obs_v"),
@@ -401,7 +398,7 @@ def _hw_fold():
     return zero, step
 
 
-def holt_winters_forecast(daily: DataFrame, horizons: tuple[int, ...] = (1, 7)) -> DataFrame:
+def holt_winters_forecast(daily: DataFrame) -> DataFrame:
     """Holt-Winters ADDITIVE seasonal smoothing with alpha = beta =
     gamma = 1/2 — :func:`holt_forecast`'s two-state dyadic recursion
     extended with a 7-slot (weekly) seasonal state, completing the
@@ -416,7 +413,7 @@ def holt_winters_forecast(daily: DataFrame, horizons: tuple[int, ...] = (1, 7)) 
     fixed left-to-right order, so any engine replays the fold
     bit-identically; seeds are level = x_1, trend = 0, seasonal all 0
     (the first pass through each slot then learns half the residual).
-    Forecast f_h = level + h*trend + s[(n-1+h) mod 7].
+    Forecasts f_h = level + h*trend + s[(n-1+h) mod 7] for h = 1 and 7.
 
     Same scale shape as holt_forecast: each group's calendar-sized daily
     series folds inside ONE Catalyst ``aggregate`` expression (the
@@ -426,7 +423,7 @@ def holt_winters_forecast(daily: DataFrame, horizons: tuple[int, ...] = (1, 7)) 
     arr = _daily_series(daily)
     zero, step = _hw_fold()
     fitted, cols = _fit(arr, zero, step)
-    for h in horizons:
+    for h in (1, 7):
         slot = (F.col("n_days") - 1 + h) % 7
         cols.append(
             F.round(

@@ -108,8 +108,6 @@ def pps_sample(
     df: DataFrame,
     weight_col: str,
     k: int,
-    id_col: str = "doc_id",
-    num_partitions: int = 32,
 ) -> DataFrame:
     """Systematic probability-proportional-to-size (PPS) sampling: draw
     exactly ``k`` units (with multiplicity) so each row's expected draw
@@ -128,7 +126,7 @@ def pps_sample(
 
     Scale shape: the prefix sum uses the same two-pass scheme as
     pack_shards_two_pass — per-bucket sums to the driver
-    (num_partitions longs), exclusive offsets broadcast back, local
+    (32 longs), exclusive offsets broadcast back, local
     window cumsum per bucket. Because the ordering key is already a
     UNIFORM 60-bit hash, buckets are exact equal-width slices of the
     hash domain — a pure integer expression both passes recompute
@@ -136,16 +134,16 @@ def pps_sample(
     are balanced by construction. No global-window funnel; the total W
     falls out of pass 1 for free.
 
-    Returns (id, weight, n_hits) for rows with n_hits > 0.
+    Returns (doc_id, weight, n_hits) for rows with n_hits > 0.
     """
     from pyspark.sql import Window
 
     spark = df.sparkSession
-    width = -(-_HASH_DOMAIN // num_partitions)  # ceil: pid < num_partitions
+    width = -(-_HASH_DOMAIN // 32)  # ceil: pid < 32
     keyed = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col(weight_col).cast("long").alias("w"),
-        _hash60(F.col(id_col)).alias("_h_"),
+        _hash60(F.col("doc_id")).alias("_h_"),
     )
     with_pid = keyed.withColumn(
         "_pid_", F.expr(f"cast(_h_ div {width} as int)")
@@ -164,7 +162,7 @@ def pps_sample(
         # weights (every n_hits would NULL via div-by-zero): nothing can
         # be drawn — return an empty frame with the contract schema.
         return with_pid.select(
-            id_col,
+            "doc_id",
             F.col("w").alias("weight"),
             F.lit(0).cast("long").alias("n_hits"),
         ).limit(0)
@@ -175,7 +173,7 @@ def pps_sample(
     )
     wl = (
         Window.partitionBy("_pid_")
-        .orderBy("_h_", id_col)
+        .orderBy("_h_", "doc_id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     cum = (F.sum("w").over(wl) + F.col("_offset_")).alias("cum")
@@ -189,14 +187,14 @@ def pps_sample(
 
     out = (
         with_pid.join(offset_df, "_pid_")
-        .select(id_col, "w", cum)
+        .select("doc_id", "w", cum)
         .withColumn("_hi_", 2 * F.lit(k) * F.col("cum") + F.lit(total_w - 1))
         .withColumn(
             "_lo_",
             2 * F.lit(k) * (F.col("cum") - F.col("w")) + F.lit(total_w - 1),
         )
         .select(
-            id_col,
+            "doc_id",
             F.col("w").alias("weight"),
             (F.expr(hits("_hi_")) - F.expr(hits("_lo_"))).cast("long").alias("n_hits"),
         )
@@ -205,27 +203,20 @@ def pps_sample(
     return out
 
 
-def ab_assign(
-    df: DataFrame, key_col: str, salt: str = "exp", n_variants: int = 2
-) -> DataFrame:
-    """Deterministic experiment assignment: variant = hash-slot of the
-    unit key (same contract as the train/val split — no RNG, no state; a
-    unit keeps its arm across reruns, partitionings and engines, and any
-    engine can re-derive the assignment for audit). ``salt`` namespaces
-    the experiment so concurrent experiments assign independently.
+def ab_assign(df: DataFrame, key_col: str) -> DataFrame:
+    """Deterministic two-arm experiment assignment: variant = hash-slot of
+    the unit key salted with ``exp:`` (same contract as the train/val
+    split — no RNG, no state; a unit keeps its arm across reruns,
+    partitionings and engines, and any engine can re-derive the
+    assignment for audit).
 
-    Adds a ``variant`` column 'A', 'B', ... — pure map expression, zero
+    Adds a ``variant`` column 'A' or 'B' — pure map expression, zero
     shuffles. Assigning on the USER key (not the event) keeps all of a
     unit's events in one arm, the correctness condition for any
     per-unit experiment metric.
     """
-    if not 2 <= n_variants <= 26:
-        raise ValueError(f"n_variants must be in [2, 26], got {n_variants}")
-    slot = _hash60(F.concat(F.lit(f"{salt}:"), F.col(key_col).cast("string"))) % n_variants
-    variant = F.when(slot == 0, "A")
-    for i in range(1, n_variants):
-        variant = variant.when(slot == i, chr(ord("A") + i))
-    return df.withColumn("variant", variant)
+    slot = _hash60(F.concat(F.lit("exp:"), F.col(key_col).cast("string"))) % 2
+    return df.withColumn("variant", F.when(slot == 0, "A").when(slot == 1, "B"))
 
 
 def reservoir_sample(
@@ -275,10 +266,10 @@ def reservoir_sample(
     )
 
 
-def purged_time_split(df: DataFrame, ts_us_col: str, embargo_us: int = 86_400_000_000) -> DataFrame:
-    """Leakage-safe temporal train/test split with an embargo gap (the
-    purged split of Lopez de Prado 2018, ch.7): train = rows at or
-    before the cutoff, test = rows after cutoff + embargo, and rows
+def purged_time_split(df: DataFrame, ts_us_col: str) -> DataFrame:
+    """Leakage-safe temporal train/test split with a one-day embargo gap
+    (the purged split of Lopez de Prado 2018, ch.7): train = rows at or
+    before the cutoff, test = rows after cutoff + 1 day, and rows
     INSIDE the gap are purged — so features built from trailing windows
     (EWMAs, rolling stats) on test rows can never see train-period
     events. A plain temporal split leaks through exactly that channel.
@@ -301,7 +292,7 @@ def purged_time_split(df: DataFrame, ts_us_col: str, embargo_us: int = 86_400_00
     cutoff = F.col("_mn_") + F.expr("((_mx_ - _mn_) * 8) div 10")
     split = (
         F.when(ts <= cutoff, F.lit("train"))
-        .when(ts > cutoff + F.lit(embargo_us), F.lit("test"))
+        .when(ts > cutoff + F.lit(86_400_000_000), F.lit("test"))
         .otherwise(F.lit("purged"))
     )
     return (

@@ -4,16 +4,16 @@
 (`percentile`) pays a per-group sort; this module computes EXACT global
 order statistics with neither: iterative histogram bisection (the
 distributed quickselect — Blum et al. selection adapted to scan-reduce
-engines). Each round bins the surviving value range into ``bins``
+engines). Each round bins the surviving value range into 1024
 buckets with one map-side-combinable aggregate, the driver inspects at
-most ``bins`` (count, min, max) rows to find the bucket holding rank k,
-and the range narrows by ~bins x. Convergence: a bucket whose min ==
+most 1024 (count, min, max) rows to find the bucket holding rank k,
+and the range narrows by ~1024x. Convergence: a bucket whose min ==
 max IS the answer (ties collapse immediately, so a value duplicated a
 billion times costs one round); otherwise the range shrinks to one
-bucket per round, and for 64-bit doubles ceil(2048 / log2(bins)) rounds
+bucket per round, and for 64-bit doubles ceil(2048 / log2(1024)) rounds
 bound the worst case — in practice 3-5 scans at any scale.
 
-At 100 TB: every round is one filtered scan + one <= bins-row reduce;
+At 100 TB: every round is one filtered scan + one <= 1024-row reduce;
 the driver never sees data rows, only bucket summaries (same contract
 as the two-pass prefix sums). Reference parity: the reference has no
 aggregation surface at all (full-fidelity transfer, src/query/mod.rs);
@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def kth_smallest(df: DataFrame, col: str, k: int, bins: int = 1024) -> float:
+def kth_smallest(df: DataFrame, col: str, k: int) -> float:
     """The exact k-th smallest (1-based) non-null value of ``col``.
 
     Raises ``ValueError`` when k is out of range. The value returned is
@@ -46,12 +46,12 @@ def kth_smallest(df: DataFrame, col: str, k: int, bins: int = 1024) -> float:
     for _ in range(64):
         if lo == hi:
             return lo
-        width = (hi - lo) / bins
+        width = (hi - lo) / 1024
         if width <= 0:  # adjacent doubles: range no longer splits
             return lo if rank <= 1 else hi
         b = F.least(
             F.floor((F.col("v") - F.lit(lo)) / F.lit(width)).cast("int"),
-            F.lit(bins - 1),  # v == hi lands past the last bucket; clamp
+            F.lit(1023),  # v == hi lands past the last bucket; clamp
         )
         hist = (
             vals.filter((F.col("v") >= lo) & (F.col("v") <= hi))

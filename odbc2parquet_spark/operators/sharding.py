@@ -12,7 +12,7 @@ Two implementations with identical output:
 - :func:`pack_shards_two_pass` — the scale path: per-partition partial
   sums (tiny: one row per partition) are collected, turned into exclusive
   partition offsets, and broadcast back; each partition then computes its
-  local cumsum + offset. The only driver traffic is num_partitions longs;
+  local cumsum + offset. The only driver traffic is 32 longs;
   document order is (ordering column) via a range repartition, so the
   global order is preserved without a global sort bottleneck.
 """
@@ -37,8 +37,6 @@ def pack_shards(docs_with_tokens: DataFrame, budget: int) -> DataFrame:
 def pack_shards_two_pass(
     docs_with_tokens: DataFrame,
     budget: int,
-    order_col: str = "doc_id",
-    num_partitions: int = 32,
 ) -> DataFrame:
     """Same output as :func:`pack_shards` without the global-window funnel.
 
@@ -47,7 +45,7 @@ def pack_shards_two_pass(
     plan literals, so pass 1 and pass 2 recompute identical buckets
     from the source scan — no persist/checkpoint, nothing pinned in
     executor storage). Pass 1 collects per-bucket token sums
-    (num_partitions longs); pass 2 adds the exclusive bucket offset to
+    (32 longs); pass 2 adds the exclusive bucket offset to
     a bucket-local running sum.
     """
     from odbc2parquet_spark.operators.bucketing import (
@@ -57,7 +55,7 @@ def pack_shards_two_pass(
 
     spark = docs_with_tokens.sparkSession
     with_pid = docs_with_tokens.withColumn(
-        "_pid_", order_bucket_col(docs_with_tokens, order_col, num_partitions)
+        "_pid_", order_bucket_col(docs_with_tokens, "doc_id", 32)
     )
     offs, _ = bucket_offsets(with_pid, ["n_tokens"])
     offset_df = F.broadcast(
@@ -70,14 +68,14 @@ def pack_shards_two_pass(
     # pass 2: local cumsum + partition offset
     wl = (
         Window.partitionBy("_pid_")
-        .orderBy(order_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     local_prefix = F.coalesce(F.sum("n_tokens").over(wl), F.lit(0))
     return (
         with_pid.join(offset_df, "_pid_")
         .select(
-            order_col,
+            "doc_id",
             F.col("n_tokens"),
             F.floor((local_prefix + F.col("_offset_")) / F.lit(budget))
             .cast("long")
@@ -86,16 +84,16 @@ def pack_shards_two_pass(
     )
 
 
-def epoch_shuffle(docs: DataFrame, n_shards: int = 8) -> DataFrame:
+def epoch_shuffle(docs: DataFrame) -> DataFrame:
     """Deterministic per-epoch training order: (epoch, doc_id, shard, pos).
 
     Each of the 2 epochs gets an independent pseudo-random permutation without any
-    RNG state: shard = md5(epoch:doc) mod n_shards (pure hash — no
+    RNG state: shard = md5(epoch:doc) mod 8 (pure hash — no
     shuffle beyond the final per-shard rank), position = rank of the md5
     key within the (epoch, shard) partition. Shards are the unit of
     parallel data loading; any two runs (or engines) produce the same
     order, which is what makes a training run reproducible/resumable.
-    The per-shard window ranks only corpus/n_shards rows per task — there
+    The per-shard window ranks only corpus/8 rows per task — there
     is no global sort.
     """
     epochs = F.explode(F.sequence(F.lit(0), F.lit(1))).alias("epoch")
@@ -105,7 +103,7 @@ def epoch_shuffle(docs: DataFrame, n_shards: int = 8) -> DataFrame:
         F.md5(F.concat_ws(":", F.col("epoch"), F.col("doc_id"))).alias("_key_"),
     )
     shard = (
-        F.conv(F.substring("_key_", 1, 8), 16, 10).cast("long") % n_shards
+        F.conv(F.substring("_key_", 1, 8), 16, 10).cast("long") % 8
     ).alias("shard")
     keyed = keyed.select("epoch", "doc_id", "_key_", shard)
     w = Window.partitionBy("epoch", "shard").orderBy("_key_")

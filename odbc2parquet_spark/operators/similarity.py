@@ -304,14 +304,14 @@ def derived_prefix_bits(n_vectors: int, target_occupancy: int = 64, max_bits: in
 
 def lsh_bucket_pairs(
     signatures: DataFrame,
-    prefix_bits: int = 8,
     max_bucket: int = 100_000,
     directed: bool = False,
     target_occupancy: int | None = None,
     n_vectors: int | None = None,
     max_prefix_bits: int = 24,
 ) -> DataFrame:
-    """Candidate pairs sharing a signature prefix bucket, from
+    """Candidate pairs sharing a signature prefix bucket (8 bits unless
+    ``target_occupancy`` derives the width), from
     :func:`capped_bucket_pairs` (one hot bucket — e.g. the all-zeros
     signature region of a clustered corpus — is dropped by the
     ``max_bucket`` cap).
@@ -321,6 +321,7 @@ def lsh_bucket_pairs(
     cheaper than unioning a flipped copy, which would re-run the whole
     bucket expansion.
     """
+    prefix_bits = 8
     if target_occupancy is not None:
         # occupancy-scaled width: the bucket count follows the corpus size
         # (a known n_vectors avoids the count job); max_prefix_bits caps it
@@ -489,9 +490,8 @@ def ivf_search(
     queries: DataFrame,
     centroids: DataFrame,
     nprobe: int = 4,
-    k: int = 10,
 ) -> DataFrame:
-    """Approximate top-k: score each query against its ``nprobe`` nearest
+    """Approximate top-10: score each query against its ``nprobe`` nearest
     cells only.
 
     Plan shape at scale: corpus->cell assignment is the (cachable /
@@ -523,7 +523,7 @@ def ivf_search(
         .withColumn("cos4", F.round(cosine(F.col("qvec"), F.col("nvec")), 4))
     )  # candidate set is already nprobe/k_cells of the corpus; per-pair
     # norm folds are acceptable here (queries are few)
-    return _cosine_rank(scored, k)
+    return _cosine_rank(scored, 10)
 
 
 def ivf_probe_cells(queries: DataFrame, centroids: DataFrame, nprobe: int = 4) -> DataFrame:
@@ -616,8 +616,8 @@ def assemble_centroids(centroids: DataFrame) -> DataFrame:
     )
 
 
-def centroid_outliers(vectors: DataFrame, top_k: int = 20) -> DataFrame:
-    """(vec_id, label, dist, rk): the ``top_k`` vectors farthest from their
+def centroid_outliers(vectors: DataFrame) -> DataFrame:
+    """(vec_id, label, dist, rk): the 20 vectors farthest from their
     OWN label's centroid, per label — mislabeled/noise candidates for
     embedding-space quality filtering.
 
@@ -643,18 +643,18 @@ def centroid_outliers(vectors: DataFrame, top_k: int = 20) -> DataFrame:
         .join(F.broadcast(cents), "label")
         .withColumn("dist", F.round(F.sqrt(d2), 4))
         .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= top_k)
+        .filter(F.col("rk") <= 20)
         .select("vec_id", "label", "dist", F.col("rk").cast("long").alias("rk"))
     )
 
 
-def _pq_split(dim: int, m: int) -> int:
-    """Subspace width, rejecting lossy splits: with dim % m != 0 the
-    trailing dimensions would silently vanish from codebook, codes and
-    LUT alike."""
-    if dim % m:
-        raise ValueError(f"dim={dim} must be divisible by m={m} subspaces")
-    return dim // m
+def _pq_split(m: int) -> int:
+    """Subspace width of a 64-wide vector, rejecting lossy splits: with
+    64 % m != 0 the trailing dimensions would silently vanish from
+    codebook, codes and LUT alike."""
+    if 64 % m:
+        raise ValueError(f"dim=64 must be divisible by m={m} subspaces")
+    return 64 // m
 
 
 def _subspace_melt(vec_col: str, m: int, sub: int, field: str) -> F.Column:
@@ -677,16 +677,15 @@ def pq_codebook(
     vectors: DataFrame,
     m: int = 8,
     k: int = 16,
-    dim: int = 64,
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(subspace, cid, c8): a product-quantization codebook — the vector
-    space split into ``m`` contiguous subspaces, each with ``k`` centroids
+    """(subspace, cid, c8): a product-quantization codebook — the 64-wide
+    vector space split into ``m`` contiguous subspaces, each with ``k`` centroids
     taken deterministically from the ``k`` lowest-id vectors' slices (the
     same no-RNG seeding rule as :func:`ivf_seed_centroids`, so any engine
     rebuilds the codebook bit-for-bit; run Lloyd per subspace when recall
     matters more than reproducibility)."""
-    sub = _pq_split(dim, m)
+    sub = _pq_split(m)
     seeds = vectors.orderBy("vec_id").limit(k)
     return seeds.select(
         F.col("vec_id").alias("cid"),
@@ -698,7 +697,6 @@ def pq_refine_codebook(
     vectors: DataFrame,
     codebook: DataFrame,
     m: int = 8,
-    dim: int = 64,
     iterations: int = 1,
 ) -> DataFrame:
     """Per-subspace Lloyd refinement of a PQ codebook — the quality lever
@@ -717,7 +715,7 @@ def pq_refine_codebook(
     divided once, rounded to 6 decimals, cast to float — the same
     order-independence rule as every other cross-engine aggregate here.
     """
-    sub = _pq_split(dim, m)
+    sub = _pq_split(m)
     cur = codebook
     for _ in range(iterations):
         melted = vectors.select(
@@ -726,7 +724,7 @@ def pq_refine_codebook(
         ).select(
             "vec_id", F.col("sv.subspace").alias("subspace"), F.col("sv.v8").alias("v8")
         )
-        codes = pq_assign(vectors, cur, m=m, dim=dim)
+        codes = pq_assign(vectors, cur, m=m)
         assigned = codes.join(melted, ["vec_id", "subspace"]).select(
             "subspace", "code", "v8"
         )
@@ -805,7 +803,6 @@ def pq_assign(
     vectors: DataFrame,
     codebook: DataFrame,
     m: int = 8,
-    dim: int = 64,
     vec_col: str = "embedding",
     arrays=None,
 ) -> DataFrame:
@@ -838,7 +835,7 @@ def pq_assign(
     import numpy as np
     import pyarrow as pa
 
-    sub = _pq_split(dim, m)
+    sub = _pq_split(m)
     # ``arrays``: a precollected _collect_codebook result, so composers
     # that feed the SAME codebook to both the assignment and probe-LUT
     # kernels (adc/ivf-pq search) evaluate its groupBy DAG once, not
@@ -884,7 +881,6 @@ def _pq_probe_lut(
     probes: DataFrame,
     codebook: DataFrame,
     m: int,
-    dim: int,
     id_col: str,
     vec_col: str,
     arrays=None,
@@ -902,7 +898,7 @@ def _pq_probe_lut(
     import numpy as np
     import pyarrow as pa
 
-    sub = _pq_split(dim, m)
+    sub = _pq_split(m)
     cb_cids, cb_mats = arrays or _collect_codebook(codebook, m, sub)
 
     def lut_batches(batches):
@@ -944,15 +940,15 @@ def _pq_probe_lut(
     )
 
 
-def _adc_rank(scored: DataFrame, top_k: int) -> DataFrame:
-    """(query_id, vec_id, adc_dec) -> the ranked ADC result frame. One
+def _adc_rank(scored: DataFrame) -> DataFrame:
+    """(query_id, vec_id, adc_dec) -> the ranked ADC top-10 frame. One
     definition of the output contract (asc-distance/asc-id tiebreak,
     double cast, column names) shared by full-scan ADC and IVF-PQ so the
     two search shapes can never return inconsistently ranked results."""
     w = W.partitionBy("query_id").orderBy(F.asc("adc_dec"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= top_k)
+        .filter(F.col("rank") <= 10)
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
@@ -967,11 +963,9 @@ def pq_adc_topk(
     probes: DataFrame,
     m: int = 8,
     k_centroids: int = 16,
-    dim: int = 64,
-    top_k: int = 10,
     codebook: DataFrame | None = None,
 ) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over PQ codes — the search half of
+    """Asymmetric-distance (ADC) top-10 over PQ codes — the search half of
     product quantization (cf. reference's query surface: the engine only
     moves typed columns; here the "column" is the small code vector).
 
@@ -996,18 +990,18 @@ def pq_adc_topk(
     cb = (
         codebook
         if codebook is not None
-        else pq_codebook(vectors, m=m, k=k_centroids, dim=dim)
+        else pq_codebook(vectors, m=m, k=k_centroids)
     )
-    cba = _collect_codebook(cb, m, _pq_split(dim, m))
-    codes = pq_assign(vectors, cb, m=m, dim=dim, arrays=cba).select("vec_id", "subspace", "code")
-    lut = _pq_probe_lut(probes, cb, m, dim, "vec_id", "embedding", arrays=cba)
+    cba = _collect_codebook(cb, m, _pq_split(m))
+    codes = pq_assign(vectors, cb, m=m, arrays=cba).select("vec_id", "subspace", "code")
+    lut = _pq_probe_lut(probes, cb, m, "vec_id", "embedding", arrays=cba)
     scored = (
         codes.join(F.broadcast(lut), ["subspace", "code"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", "vec_id")
         .agg(F.sum("pd2").alias("adc_dec"))
     )
-    return _adc_rank(scored, top_k)
+    return _adc_rank(scored)
 
 
 def ivf_pq_search(
@@ -1017,9 +1011,8 @@ def ivf_pq_search(
     k_cells: int = 16,
     m: int = 8,
     k_centroids: int = 16,
-    top_k: int = 10,
 ) -> DataFrame:
-    """IVF-PQ: the full billion-scale ANN index — coarse cell routing
+    """IVF-PQ top-10: the full billion-scale ANN index — coarse cell routing
     (IVF) composed with code-book distances (ADC over PQ codes).
 
     Each query visits only its ``nprobe`` nearest cells, and within them
@@ -1040,10 +1033,10 @@ def ivf_pq_search(
     cents = ivf_seed_centroids(vectors, k_cells)
     cell = ivf_assign(vectors, cents).select("vec_id", "centroid_id")
     cb = pq_codebook(vectors, m=m, k=k_centroids)
-    cba = _collect_codebook(cb, m, _pq_split(64, m))
+    cba = _collect_codebook(cb, m, _pq_split(m))
     codes = pq_assign(vectors, cb, m=m, arrays=cba).select("vec_id", "subspace", "code")
     qprobe = ivf_probe_cells(probes, cents, nprobe).select("query_id", "centroid_id")
-    lut = _pq_probe_lut(probes, cb, m, 64, "vec_id", "embedding", arrays=cba)
+    lut = _pq_probe_lut(probes, cb, m, "vec_id", "embedding", arrays=cba)
     cand = (
         cell.join(F.broadcast(qprobe), "centroid_id")
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -1055,7 +1048,7 @@ def ivf_pq_search(
         .groupBy("query_id", "vec_id")
         .agg(F.sum("pd2").alias("adc_dec"))
     )
-    return _adc_rank(scored, top_k)
+    return _adc_rank(scored)
 
 
 def ivf_pq_residual_search(
@@ -1110,7 +1103,7 @@ def ivf_pq_residual_search(
         )
     )
     cb = pq_codebook(rv, m=m, k=k_centroids, vec_col="rvec")
-    cba = _collect_codebook(cb, m, _pq_split(64, m))
+    cba = _collect_codebook(cb, m, _pq_split(m))
     codes = pq_assign(rv, cb, m=m, vec_col="rvec", arrays=cba).select("vec_id", "subspace", "code")
     qprobe = ivf_probe_cells(probes, cents, nprobe).select("query_id", "centroid_id")
     qres = (
@@ -1125,7 +1118,7 @@ def ivf_pq_residual_search(
         )
     )
     lut = (
-        _pq_probe_lut(qres, cb, m, 64, "qc", "qrvec", arrays=cba)
+        _pq_probe_lut(qres, cb, m, "qc", "qrvec", arrays=cba)
         .select(
             F.expr("query_id div 1024").alias("query_id"),
             (F.col("query_id") % 1024).alias("centroid_id"),
@@ -1145,29 +1138,28 @@ def ivf_pq_residual_search(
         .groupBy("query_id", "vec_id")
         .agg(F.sum("pd2").alias("adc_dec"))
     )
-    return _adc_rank(scored, 10)
+    return _adc_rank(scored)
 
 
 def knn_graph(
     vectors: DataFrame,
-    k: int = 5,
     n_planes: int = 16,
     dim: int = 64,
-    prefix_bits: int = 8,
 ) -> DataFrame:
-    """Approximate k-nearest-neighbor GRAPH over the whole corpus:
-    (vec_id, neighbor_id, cosine4, rank<=k) for every vector.
+    """Approximate 5-nearest-neighbor GRAPH over the whole corpus:
+    (vec_id, neighbor_id, cosine4, rank<=5) for every vector.
 
     The self-join that would be O(N^2) becomes LSH-bucket candidates
-    (single capped shuffle — :func:`lsh_bucket_pairs`), symmetrized, then
-    exact-cosine reranked with a per-source top-k window. Candidates per
+    (single capped shuffle — :func:`lsh_bucket_pairs` on 8-bit
+    prefixes), symmetrized, then exact-cosine reranked with a per-source
+    top-k window. Candidates per
     node are bucket-bounded, so the window sorts tiny per-key groups.
     This is the substrate for graph-based semantic dedup and diversity
     sampling; at 100 TB the bucket prefix widens (more, smaller buckets)
     and the 100,000-row bucket cap bounds any hot region.
     """
     sig = lsh_signatures(vectors, n_planes, dim)
-    sym = lsh_bucket_pairs(sig, prefix_bits, directed=True).select(
+    sym = lsh_bucket_pairs(sig, directed=True).select(
         "id_a", "id_b"
     )
     # norms once per NODE before the pair joins — cosine() inline would
@@ -1195,7 +1187,7 @@ def knn_graph(
     w = W.partitionBy("vec_id").orderBy(F.desc("cos4"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         # + 0.0 pins IEEE signed zero: a near-orthogonal pair rounds to
         # -0.0 on DuckDB but 0.0 on Spark (ordering is unaffected — the
         # zeros compare equal — but the displayed cell diverges)
@@ -1226,9 +1218,9 @@ def random_projection(vectors: DataFrame, dim: int = 64) -> DataFrame:
     return vectors.select("vec_id", proj.alias("projected"))
 
 
-def lsh_multiprobe_pairs(signatures: DataFrame, prefix_bits: int = 8) -> DataFrame:
+def lsh_multiprobe_pairs(signatures: DataFrame) -> DataFrame:
     """Multi-probe LSH candidates: each vector registers under its own
-    prefix bucket AND the 2 buckets at Hamming distance 1 (the two lowest
+    8-bit prefix bucket AND the 2 buckets at Hamming distance 1 (the two lowest
     bits flipped) — near-misses that landed one bit apart still collide,
     recovering recall that single-bucket LSH loses without adding tables.
 
@@ -1236,7 +1228,7 @@ def lsh_multiprobe_pairs(signatures: DataFrame, prefix_bits: int = 8) -> DataFra
     (100,000-row cap), deduped since a pair can meet in several buckets:
     candidate volume scales by the probe count, not by table count.
     """
-    base = F.col("sig").bitwiseAND(F.lit((1 << prefix_bits) - 1))
+    base = F.col("sig").bitwiseAND(F.lit((1 << 8) - 1))
     bucket_list = F.array(base, *[base.bitwiseXOR(F.lit(1 << j)) for j in range(2)])
     bucketed = signatures.select("vec_id", F.explode(bucket_list).alias("bucket"))
     return capped_bucket_pairs(bucketed, ["bucket"], 100_000, dedupe=True)
@@ -1259,10 +1251,9 @@ def lsh_banded_pairs(signatures: DataFrame, band_bits: int = 4) -> DataFrame:
 def semantic_dedup_cells(
     vectors: DataFrame,
     centroids: DataFrame,
-    threshold: float = 0.4,
 ) -> DataFrame:
     """SemDeDup-style semantic dedup: prune a vector when a LOWER-id
-    vector in the SAME IVF cell has cosine >= ``threshold``.
+    vector in the SAME IVF cell has cosine >= 0.4.
 
     Returns (vec_id, cell, kept). The scale contract: the pairwise pass
     is scoped to one cell (join key = centroid_id), so cost is
@@ -1309,7 +1300,7 @@ def semantic_dedup_cells(
                 4,
             ),
         )
-        .filter(F.col("cos4") >= threshold)
+        .filter(F.col("cos4") >= 0.4)
         .select(F.col("b.vec_id").alias("vec_id"))
         .distinct()
     )
@@ -1322,26 +1313,21 @@ def semantic_dedup_cells(
     )
 
 
-def mmr_rerank(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k_cand: int = 12,
-    k_sel: int = 4,
-) -> DataFrame:
+def mmr_rerank(vectors: DataFrame, queries: DataFrame) -> DataFrame:
     """Maximal-marginal-relevance diversified top-k: greedily pick
-    ``k_sel`` of the ``k_cand`` most-relevant candidates per probe, each
+    4 of the 12 most-relevant candidates per probe, each
     step taking argmax of ``0.5 * rel - 0.5 * max_sim_to_selected``
     (Carbonell & Goldstein '98 — the standard de-redundancy re-rank for
     retrieval-augmented training-data selection).
 
     Scale shape: candidate generation is the broadcast-probe top-k scan
     (corpus never shuffles); then each probe's candidates COLLAPSE TO ONE
-    ROW (an array of k_cand (id, rel, emb, nsq) structs) and the entire
+    ROW (an array of 12 (id, rel, emb, nsq) structs) and the entire
     greedy loop runs as row-level higher-order expressions — unrolled
-    into ``k_sel`` chained projections, each a fold-argmax over the
+    into 4 chained projections, each a fold-argmax over the
     remaining candidates with the pairwise cosine computed inline. No
     joins after the one collect_list groupBy, no windows, no UDF, no
-    recomputation: the plan is scan -> shuffle(probe) -> k_sel narrow
+    recomputation: the plan is scan -> shuffle(probe) -> 4 narrow
     projections. (A join-per-step formulation measured 70 shuffle
     exchanges for the same semantics; this is the idiomatic Spark shape
     for bounded per-group iterative algorithms.) All similarities round
@@ -1351,7 +1337,7 @@ def mmr_rerank(
     Emits (query_id, step, vec_id, score): step 1 score = relevance,
     later steps the MMR objective (rounded to 6).
     """
-    ranked = brute_force_topk(vectors, queries, k=k_cand)
+    ranked = brute_force_topk(vectors, queries, k=12)
     cembs = ranked.join(
         vectors.select(
             F.col("vec_id").alias("neighbor_id"),
@@ -1404,8 +1390,8 @@ def mmr_rerank(
     def bump_m(cm_col: F.Column, new_sel: F.Column) -> F.Column:
         """Incremental max-sim-to-selected — the oracle's GREATEST(m,
         new_sim) recurrence: ONE pairwise cosine per candidate per step
-        instead of re-scanning the whole selected set (O(k_sel·k_cand)
-        dim-folds total, not O(k_sel²·k_cand))."""
+        instead of re-scanning the whole selected set (O(4·12)
+        dim-folds total, not O(4²·12))."""
         return F.transform(
             cm_col,
             lambda x: F.struct(
@@ -1439,7 +1425,7 @@ def mmr_rerank(
             F.round(F.col("sel1")["rel"], 6).alias("score"),
         )
     ]
-    for t in range(2, k_sel + 1):
+    for t in range(2, 5):
         df = df.withColumn(
             f"best{t}", argmax_step(F.col(f"CM{t - 1}"), F.col(f"ids{t - 1}"))
         )
@@ -1449,7 +1435,7 @@ def mmr_rerank(
                 F.col(f"ids{t - 1}"), F.array(F.col(f"best{t}")["cand"]["c"])
             ),
         )
-        if t < k_sel:
+        if t < 4:
             df = df.withColumn(
                 f"CM{t}", bump_m(F.col(f"CM{t - 1}"), F.col(f"best{t}")["cand"])
             )
@@ -1460,7 +1446,7 @@ def mmr_rerank(
                 F.col(f"best{t}")["score"].alias("score"),
             )
         )
-    # exhausted steps (fewer candidates than k_sel) carry a NULL id —
+    # exhausted steps (fewer than 4 candidates) carry a NULL id —
     # filter on the UNCAST id so non-integer id types survive (a
     # cast('long') here silently emptied string-id outputs)
     return (
@@ -1478,20 +1464,18 @@ def mmr_rerank(
 def ivf_pq_nprobe_curve(
     vectors: DataFrame,
     probes: DataFrame,
-    nprobes: tuple[int, ...] = (1, 2, 4, 8),
     k_cells: int = 16,
     m: int = 8,
     k_centroids: int = 16,
-    top_k: int = 10,
 ) -> DataFrame:
-    """IVF-PQ top-k at SEVERAL nprobe operating points from ONE index
+    """IVF-PQ top-10 at the nprobe operating points 1, 2, 4 and 8 from ONE index
     build — how a real deployment sweeps the knob (the index is immutable;
     only the router's cell cutoff moves). Key identity: the candidate set
-    at nprobe=p is exactly the scored set at max(nprobes) filtered to
+    at nprobe=p is exactly the scored set at nprobe=8 filtered to
     probe rank <= p (each corpus vector lives in one cell, so a (query,
     vec) candidate carries one well-defined cell rank). The rank-annotated
-    ADC table is localCheckpointed once — bounded by candidates(max
-    nprobe) ~ |probes| * N * max(nprobes)/k_cells narrow rows — and every
+    ADC table is localCheckpointed once — bounded by candidates(nprobe=8)
+    ~ |probes| * N * 8/k_cells narrow rows — and every
     operating point is a filter + per-query top-k window over those
     materialized blocks, not a rebuild. (The blocks live until the
     session drops the result; they are candidate-sized, not corpus-sized.)
@@ -1500,16 +1484,15 @@ def ivf_pq_nprobe_curve(
     result contract of :func:`ivf_pq_search` with the operating point
     attached.
     """
-    pmax = max(nprobes)
     cents = ivf_seed_centroids(vectors, k_cells)
     cell = ivf_assign(vectors, cents).select("vec_id", "centroid_id")
     cb = pq_codebook(vectors, m=m, k=k_centroids)
-    cba = _collect_codebook(cb, m, _pq_split(64, m))
+    cba = _collect_codebook(cb, m, _pq_split(m))
     codes = pq_assign(vectors, cb, m=m, arrays=cba).select("vec_id", "subspace", "code")
-    qprobe = ivf_probe_cells(probes, cents, pmax).select(
+    qprobe = ivf_probe_cells(probes, cents, 8).select(
         "query_id", "centroid_id", F.col("rank").alias("prank")
     )
-    lut = _pq_probe_lut(probes, cb, m, 64, "vec_id", "embedding", arrays=cba)
+    lut = _pq_probe_lut(probes, cb, m, "vec_id", "embedding", arrays=cba)
     cand = (
         cell.join(F.broadcast(qprobe), "centroid_id")
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -1523,9 +1506,9 @@ def ivf_pq_nprobe_curve(
         .localCheckpoint(eager=True)
     )
     out = None
-    for p in nprobes:
+    for p in (1, 2, 4, 8):
         ranked = _adc_rank(
-            scored.filter(F.col("prank") <= p).drop("prank"), top_k
+            scored.filter(F.col("prank") <= p).drop("prank")
         ).select(F.lit(p).alias("nprobe"), "query_id", "neighbor_id", "adc4", "rank")
         out = ranked if out is None else out.unionByName(ranked)
     return out

@@ -59,16 +59,16 @@ def heavy_hitters(df: DataFrame, col: str, top_n: int = 10) -> DataFrame:
     )
 
 
-def count_min_sketch(df: DataFrame, col: str, width: int = 256) -> DataFrame:
+def count_min_sketch(df: DataFrame, col: str) -> DataFrame:
     """(row, col, n): a count-min sketch of the value stream — the
     fixed-size frequency summary that answers "roughly how often does X
-    occur" over arbitrarily large streams with 4*width counters.
+    occur" over arbitrarily large streams with 4*256 counters.
 
-    Hash family: h_j = (h1 + j*h2) mod width from one md5 per value (the
+    Hash family: h_j = (h1 + j*h2) mod 256 from one md5 per value (the
     same Kirsch-Mitzenmacher two-hash construction as the MinHash family,
     so an independent engine rebuilds identical counters). Build = one
     explode to 4 narrow rows + one groupBy on (row, col) with map-side
-    partials; the sketch is 4*width rows regardless of stream size.
+    partials; the sketch is 4*256 rows regardless of stream size.
     """
     h1 = F.conv(F.substring(F.md5(F.col(col).cast("string")), 1, 15), 16, 10).cast("long")
     h2 = F.conv(F.substring(F.md5(F.col(col).cast("string")), 16, 15), 16, 10).cast("long")
@@ -76,7 +76,7 @@ def count_min_sketch(df: DataFrame, col: str, width: int = 256) -> DataFrame:
         *[
             F.struct(
                 F.lit(j).alias("row"),
-                ((h1 + F.lit(j) * h2) % F.lit(width)).cast("long").alias("col"),
+                ((h1 + F.lit(j) * h2) % F.lit(256)).cast("long").alias("col"),
             )
             for j in range(4)
         ]
@@ -89,9 +89,9 @@ def count_min_sketch(df: DataFrame, col: str, width: int = 256) -> DataFrame:
     )
 
 
-def cms_estimate(sketch: DataFrame, probes: DataFrame, width: int = 256) -> DataFrame:
+def cms_estimate(sketch: DataFrame, probes: DataFrame) -> DataFrame:
     """(value, est): point-frequency estimates — min over the sketch rows
-    of each probe's ``value`` counter. The sketch (4*width rows) broadcasts;
+    of each probe's ``value`` counter. The sketch (4*256 rows) broadcasts;
     estimates never over-count below the classic eps*N bound."""
     h1 = F.conv(F.substring(F.md5(F.col("value").cast("string")), 1, 15), 16, 10).cast("long")
     h2 = F.conv(F.substring(F.md5(F.col("value").cast("string")), 16, 15), 16, 10).cast("long")
@@ -99,7 +99,7 @@ def cms_estimate(sketch: DataFrame, probes: DataFrame, width: int = 256) -> Data
         *[
             F.struct(
                 F.lit(j).alias("row"),
-                ((h1 + F.lit(j) * h2) % F.lit(width)).cast("long").alias("col"),
+                ((h1 + F.lit(j) * h2) % F.lit(256)).cast("long").alias("col"),
             )
             for j in range(4)
         ]
@@ -142,7 +142,6 @@ def binned_quantiles(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    quantiles: tuple[float, ...] = (0.5, 0.95, 0.99),
 ) -> DataFrame:
     """Mergeable per-group quantile estimates from fixed-width value bins
     — the deterministic scale substitute for exact per-group percentile
@@ -150,9 +149,9 @@ def binned_quantiles(
 
     One map-side-combinable groupBy (group, bin) -> counts; the
     cumulative walk runs per group over its OWN bin list (bounded by the
-    value range / 0.01, not by row count). The estimate for quantile
-    q is the upper edge of the first bin whose running count reaches
-    ceil(q * n) — a value guaranteed within one bin width of the true
+    value range / 0.01, not by row count). The estimate for each quantile
+    q of 0.5, 0.95 and 0.99 is the upper edge of the first bin whose
+    running count reaches ceil(q * n) — a value guaranteed within one bin width of the true
     quantile. Rows per group shipped: |bins|, regardless of corpus size.
     """
     bin_col = F.floor(F.col(value_col) / F.lit(0.01)).cast("long")
@@ -166,7 +165,7 @@ def binned_quantiles(
         "total", F.sum("c").over(Window.partitionBy(*group_cols))
     )
     aggs = []
-    for q in quantiles:
+    for q in (0.5, 0.95, 0.99):
         name = f"p{int(q * 100)}"
         target = F.ceil(F.lit(q) * F.col("total"))
         qualifying = F.when(F.col("cum") >= target, F.col("bin"))

@@ -42,7 +42,6 @@ def skyline_2d(
     df: DataFrame,
     min_col: str,
     max_col: str,
-    num_partitions: int = 32,
 ) -> DataFrame:
     """Rows of ``df`` on the Pareto frontier of (minimize ``min_col``,
     maximize ``max_col``). Returns the input columns unchanged; duplicate
@@ -51,7 +50,7 @@ def skyline_2d(
     """
     src = df.filter(F.col(min_col).isNotNull() & F.col(max_col).isNotNull())
     with_pid = src.withColumn(
-        "_pid_", order_bucket_col(src, min_col, num_partitions)
+        "_pid_", order_bucket_col(src, min_col, 32)
     )
     per_x = with_pid.groupBy("_pid_", min_col).agg(
         F.max(max_col).alias("_ymax_")

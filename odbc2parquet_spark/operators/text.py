@@ -355,26 +355,23 @@ def domain_mix(docs: DataFrame) -> DataFrame:
     )
 
 
-def chunk_documents(docs: DataFrame, chunk_tokens: int = 32, overlap: int = 8) -> DataFrame:
+def chunk_documents(docs: DataFrame) -> DataFrame:
     """Split documents into overlapping token windows — the
     context-length-bounded chunking step that feeds tokenization/packing
     in a training pipeline.
 
-    (doc_id, chunk_id, n_tokens, chunk_hash): chunk windows start every
-    ``chunk_tokens - overlap`` tokens; the tail keeps partial chunks so no
+    (doc_id, chunk_id, n_tokens, chunk_hash): 32-token windows start every
+    24 tokens (8 tokens of overlap); the tail keeps partial chunks so no
     token is dropped. Emits md5 of the chunk text (not the text itself)
     to keep the output narrow; downstream consumers re-slice lazily from
     the source. Narrow per-row arrays + one posexplode — zero shuffles.
     """
-    step = chunk_tokens - overlap
-    if step <= 0:
-        raise ValueError("overlap must be smaller than chunk_tokens")
     t = F.col("text")
     prepared = docs.select(F.col("doc_id"), words(t).alias("ws"))
     starts = F.when(
-        F.size("ws") > 0, F.sequence(F.lit(1), F.size("ws"), F.lit(step))
+        F.size("ws") > 0, F.sequence(F.lit(1), F.size("ws"), F.lit(24))
     ).otherwise(F.array().cast("array<int>"))
-    chunks = F.transform(starts, lambda s: F.slice(F.col("ws"), s, chunk_tokens))
+    chunks = F.transform(starts, lambda s: F.slice(F.col("ws"), s, 32))
     exploded = prepared.select(
         "doc_id", F.posexplode(chunks).alias("chunk_id", "chunk")
     )
@@ -893,8 +890,8 @@ def bpe_learn_batched(
     return merges
 
 
-def hash_embed_vectors(docs: DataFrame, dim: int = 16) -> DataFrame:
-    """Feature-hashed document vectors: (doc_id, nnz, vec array<double>).
+def hash_embed_vectors(docs: DataFrame) -> DataFrame:
+    """Feature-hashed 16-wide document vectors: (doc_id, nnz, vec array<double>).
 
     Each token adds +/-1 to an md5-chosen bucket; the vector is
     L2-normalized and each component rounded to 6 decimals (the rounding
@@ -906,10 +903,10 @@ def hash_embed_vectors(docs: DataFrame, dim: int = 16) -> DataFrame:
         F.col("doc_id"), F.explode(words(F.col("text"))).alias("w")
     ).select(
         "doc_id",
-        (h1 % dim).alias("bucket"),
+        (h1 % 16).alias("bucket"),
         # sign from the next bit of the residue — pure int64 arithmetic
         # (a double division here would read bits beyond 2^53 exactness)
-        F.when(h1 % (2 * dim) < dim, F.lit(1)).otherwise(F.lit(-1)).alias("sign"),
+        F.when(h1 % 32 < 16, F.lit(1)).otherwise(F.lit(-1)).alias("sign"),
     )
     sums = toks.groupBy("doc_id", "bucket").agg(
         F.sum("sign").cast("long").alias("s")
@@ -918,7 +915,7 @@ def hash_embed_vectors(docs: DataFrame, dim: int = 16) -> DataFrame:
         F.map_from_entries(F.collect_list(F.struct("bucket", "s"))).alias("m")
     )
     vec = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
+        F.sequence(F.lit(0), F.lit(15)),
         lambda b: F.coalesce(F.element_at(F.col("m"), b), F.lit(0)).cast("double"),
     )
     nsq = F.aggregate(vec, F.lit(0.0), lambda acc, x: acc + x * x)
@@ -927,7 +924,7 @@ def hash_embed_vectors(docs: DataFrame, dim: int = 16) -> DataFrame:
         F.transform(vec, lambda x: F.round(x / F.sqrt(nsq), 6)),
     ).otherwise(vec)
     empty = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)), lambda b: F.lit(0.0)
+        F.sequence(F.lit(0), F.lit(15)), lambda b: F.lit(0.0)
     )
     return (
         docs.select(F.col("doc_id"))
@@ -943,9 +940,9 @@ def hash_embed_vectors(docs: DataFrame, dim: int = 16) -> DataFrame:
     )
 
 
-def hash_embed(docs: DataFrame, dim: int = 16) -> DataFrame:
+def hash_embed(docs: DataFrame) -> DataFrame:
     """Feature-hashed document embeddings (the hashing trick): each token
-    adds +/-1 to md5-chosen bucket of a ``dim``-wide vector; the result is
+    adds +/-1 to md5-chosen bucket of a 16-wide vector; the result is
     L2-normalized. No vocabulary, no model — the deterministic text ->
     vector bridge that lets the ANN/dedup stack (IVF, LSH, SemDeDup) run
     on corpora that arrive WITHOUT a precomputed embedding column.
@@ -959,11 +956,11 @@ def hash_embed(docs: DataFrame, dim: int = 16) -> DataFrame:
     drop below 1e-3) would silently break cross-engine hash parity.
 
     Scale shape: tokens explode once; one (doc, bucket) groupBy with
-    map-side +/-1 partials (shuffle rows <= docs x dim); vector assembly
+    map-side +/-1 partials (shuffle rows <= docs x 16); vector assembly
     is a map_from_entries + dense transform inside the per-doc aggregate,
     never a pivot. Signs/buckets are md5-derived, engine-reproducible.
     """
-    v = hash_embed_vectors(docs, dim)
+    v = hash_embed_vectors(docs)
     return v.select(
         "doc_id",
         "nnz",
@@ -1139,12 +1136,12 @@ def bigram_lm_scores(docs: DataFrame) -> DataFrame:
     )
 
 
-def neg_sample_table(docs: DataFrame, table_size: int = 1000) -> DataFrame:
+def neg_sample_table(docs: DataFrame) -> DataFrame:
     """word2vec-style negative-sampling table: each vocabulary word gets
     draws proportional to count^(3/4) (Mikolov et al.'s unigram
     flattening — the exponent that keeps rare words reachable without
     letting stopwords dominate), apportioned EXACTLY over a fixed table
-    of ``table_size`` slots by the largest-remainder (Hamilton) method.
+    of 1000 slots by the largest-remainder (Hamilton) method.
 
     Determinism end-to-end: c^(3/4) is computed as sqrt(c)*sqrt(sqrt(c))
     — sqrt is the one power IEEE 754 requires correctly rounded (the
@@ -1152,7 +1149,7 @@ def neg_sample_table(docs: DataFrame, table_size: int = 1000) -> DataFrame:
     engine; it is then quantized to an int64 micro-weight and EVERYTHING
     downstream is integer arithmetic: base quota = (T * w) div W,
     remainders ranked (remainder DESC, word) for the leftover slots.
-    sum(n_draws) == table_size exactly, by construction. Returns
+    sum(n_draws) == 1000 exactly, by construction. Returns
     (word, c, w_micro, n_draws) for words with n_draws > 0.
 
     Scale shape: one token groupBy (map-side partial) + two 1-row scalar
@@ -1162,12 +1159,12 @@ def neg_sample_table(docs: DataFrame, table_size: int = 1000) -> DataFrame:
     as every LM table here.
 
     int64 headroom (audited round 9): the largest intermediate is
-    table_size * w_micro = 1000 * c^0.75 * 1e6, which stays inside int64
+    1000 * w_micro = 1000 * c^0.75 * 1e6, which stays inside int64
     for any token with c <= 4.6e13 occurrences — above the total token
     count of a 100 TB corpus (~2e13), and reached only by a degenerate
     single-token corpus. Note Spark would WRAP silently past that bound
     while DuckDB promotes SUM to int128 / errors on multiply overflow —
-    if table_size is ever raised past ~10^5, move w_micro to
+    if the table is ever grown past ~10^5 slots, move w_micro to
     DECIMAL(38,0) on both engines first."""
     counts = (
         docs.select(F.explode(words(F.col("text"))).alias("w"))
@@ -1185,11 +1182,11 @@ def neg_sample_table(docs: DataFrame, table_size: int = 1000) -> DataFrame:
         "w",
         "c",
         "w_micro",
-        F.expr(f"({table_size} * w_micro) div tot").alias("base"),
-        F.expr(f"({table_size} * w_micro) % tot").alias("rem"),
+        F.expr("(1000 * w_micro) div tot").alias("base"),
+        F.expr("(1000 * w_micro) % tot").alias("rem"),
     )
     deficit = based.agg(
-        (F.lit(table_size) - F.sum("base")).alias("deficit")
+        (F.lit(1000) - F.sum("base")).alias("deficit")
     )
     ranked = based.crossJoin(F.broadcast(deficit)).withColumn(
         "rk", F.row_number().over(Window.orderBy(F.desc("rem"), F.asc("w")))

@@ -506,7 +506,7 @@ def ev_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep_line_concurrency over the session_window intervals): the
     capacity-planning number — how many users were on AT ONCE — via the
     sweep-line running sum, computed as a two-pass distributed prefix
-    sum (no global window; the driver sees num_partitions longs). The
+    sum (no global window; the driver sees 32 longs). The
     oracle rebuilds sessions with gaps-and-islands SQL and sweeps with
     a plain window — two independent formulations, one hash."""
     from odbc2parquet_spark.operators.ranges import sweep_line_concurrency

@@ -124,7 +124,7 @@ def ev_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov D between purchase and view event
     values (operators/drift.ks_two_sample). The corpus collapses to one
     row per distinct value map-side; both empirical CDFs are distributed
-    prefix sums (prefix_sums two-pass — driver sees num_partitions
+    prefix sums (prefix_sums two-pass — driver sees 32
     longs, never data); the max gap reduces order-independently after
     rounding. The oracle rebuilds the CDFs with a plain SQL window."""
     ev = load_table(spark, sf_dir, "events").filter(

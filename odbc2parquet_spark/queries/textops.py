@@ -4532,7 +4532,7 @@ def tx_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     the token pipelines) shows up here and nowhere else. The gate is a
     1-row broadcast cross; every corpus-scale stage is keyed. At 100 TB
     the only global structure is the shard prefix sum's
-    num_partitions-long offset table and the NTILE tercile (documented
+    32-long offset table and the NTILE tercile (documented
     rank->cutpoint substitution in tx_ccnet_buckets)."""
     from odbc2parquet_spark.operators.sharding import pack_shards_two_pass
     from odbc2parquet_spark.queries import QUERIES

@@ -1,12 +1,12 @@
 """Watermarked event-stream operators.
 
 All but ``late_event_audit`` work on a streaming or a batch DataFrame
-alike: the watermark and window arguments bound the state a stream
+alike: their fixed watermark and window bound the state a stream
 keeps, and a batch frame ignores the watermark. The registry runs them
 in batch over ``events`` and ``documents`` (queries/events.py,
 queries/dedup.py), checked against a DuckDB oracle. ``late_event_audit``
-replays a recorded log to show which events a given watermark delay
-would drop.
+replays a recorded log to show which events a 10-minute watermark
+delay would drop.
 """
 
 from __future__ import annotations
@@ -15,15 +15,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def windowed_event_counts(events: DataFrame, window: str = "5 minutes") -> DataFrame:
-    """Watermarked tumbling-window aggregate over the event stream.
+def windowed_event_counts(events: DataFrame) -> DataFrame:
+    """Watermarked 5-minute tumbling-window aggregate over the event stream.
 
     Late rows beyond the 10-minute watermark are dropped and state is bounded —
     the property that keeps a 100 TB/day stream's state finite.
     """
     return (
         events.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n"),
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"),
@@ -38,12 +38,12 @@ def windowed_event_counts(events: DataFrame, window: str = "5 minutes") -> DataF
     )
 
 
-def sessionized_counts(events: DataFrame, gap: str = "10 minutes") -> DataFrame:
-    """Session windows per user: built-in session_window (gap-based),
-    the stateful-operator shape for per-entity streaks."""
+def sessionized_counts(events: DataFrame) -> DataFrame:
+    """Session windows per user: built-in session_window with a 10-minute
+    gap, the stateful-operator shape for per-entity streaks."""
     return (
         events.withWatermark("ts", "30 minutes")
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        .groupBy(F.session_window("ts", "10 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
             F.col("w.start").alias("session_start"),
@@ -97,23 +97,21 @@ def streaming_exact_dedup(docs: DataFrame) -> DataFrame:
     hashed = docs.withColumn("content_hash", F.md5(F.col("text")))
     if "ts" in docs.columns:
         hashed = hashed.withWatermark("ts", "1 hour")
-        return hashed.dropDuplicates(["content_hash"])
     return hashed.dropDuplicates(["content_hash"])
 
 
 def late_event_audit(
     events: DataFrame,
-    delay_seconds: int = 600,
     order_col: str = "event_id",
 ) -> DataFrame:
     """What-if audit of a streaming watermark policy over a recorded log:
     which events WOULD the engine have dropped as too late?
 
     Arrival order is the ingestion sequence (``order_col``); the watermark
-    before each event is (max event-time seen so far) - delay. An event is
+    before each event is (max event-time seen so far) - 10 minutes. An event is
     late iff its event time is below that. Emits per-event-type totals
-    (n_events, n_late) — the tuning signal for choosing a watermark delay
-    before deploying the streaming job.
+    (n_events, n_late) — the tuning signal for a watermark delay before
+    deploying the streaming job.
 
     The running max uses the same two-pass shape as
     operators/sharding.pack_shards_two_pass: per-bucket maxima (one row
@@ -157,7 +155,7 @@ def late_event_audit(
     # greatest() skips NULLs: first event of the first partition has no
     # prior watermark and stays NULL -> never late.
     seen_max = F.greatest(local_max, F.col("_prior_"))
-    late = (F.col("_us_") < seen_max - F.lit(delay_seconds * 1_000_000)).cast("int")
+    late = (F.col("_us_") < seen_max - F.lit(600 * 1_000_000)).cast("int")
     return (
         with_pid.join(prior_df, "_pid_")
         .select("event_type", F.coalesce(late, F.lit(0)).alias("_late_"))

@@ -256,22 +256,21 @@ def test_nprobe_curve_equals_independent_searches(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 5)
-    curve = ivf_pq_nprobe_curve(
-        emb, probes, nprobes=(1, 2, 4), k_cells=8, k_centroids=8, top_k=5,
-    ).collect()
+    curve = ivf_pq_nprobe_curve(emb, probes, k_cells=8, k_centroids=8).collect()
     got = {
         p: sorted(
             (r.query_id, r.neighbor_id, r.adc4, r.rank)
             for r in curve
             if r.nprobe == p
         )
-        for p in (1, 2, 4)
+        for p in (1, 2, 4, 8)
     }
-    for p in (1, 2, 4):
+    assert {r.nprobe for r in curve} == set(got)
+    for p in got:
         ref = sorted(
             (r.query_id, r.neighbor_id, r.adc4, r.rank)
             for r in ivf_pq_search(
-                emb, probes, nprobe=p, k_cells=8, k_centroids=8, top_k=5,
+                emb, probes, nprobe=p, k_cells=8, k_centroids=8,
             ).collect()
         )
         assert got[p] == ref, p

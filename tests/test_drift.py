@@ -22,7 +22,7 @@ def test_prefix_sums_matches_global_window(spark):
     df = spark.createDataFrame(rows, ["k", "x", "y"])
     out = {
         r.k: (r.c_x, r.c_y)
-        for r in prefix_sums(df, ["k"], ["x", "y"], num_partitions=8).collect()
+        for r in prefix_sums(df, ["k"], ["x", "y"]).collect()
     }
     cx = cy = 0
     for k, x, y in rows:
@@ -251,15 +251,12 @@ def test_two_pass_ops_leave_no_persistent_rdds(spark):
     from odbc2parquet_spark.operators.sampling import pps_sample
     from odbc2parquet_spark.operators.sharding import pack_shards_two_pass
 
-    df = spark.createDataFrame([(i, (i * 7) % 5 + 1) for i in range(300)], ["k", "x"])
-    prefix_sums(df, ["k"], ["x"], num_partitions=4).count()
+    df = spark.createDataFrame([(i, (i * 7) % 5 + 1) for i in range(300)], ["doc_id", "x"])
+    prefix_sums(df, ["doc_id"], ["x"]).count()
     iv = spark.createDataFrame([(i, i + 3) for i in range(300)], ["s", "e"])
-    sweep_line_concurrency(iv, "s", "e", num_partitions=4).count()
-    pack_shards_two_pass(
-        df.withColumnRenamed("x", "n_tokens"), budget=50, order_col="k",
-        num_partitions=4,
-    ).count()
-    pps_sample(df, "x", k=10, id_col="k", num_partitions=4).count()
+    sweep_line_concurrency(iv, "s", "e").count()
+    pack_shards_two_pass(df.withColumnRenamed("x", "n_tokens"), budget=50).count()
+    pps_sample(df, "x", k=10).count()
     assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == 0
 
 
@@ -271,8 +268,8 @@ def _persistent_rdd_ids(spark):
 
 
 #: graph operator -> a call on (id) nodes, (src, dst) edges and the same
-#: edges as (id_a, id_b) pairs, with enough fixed rounds to pass an
-#: intermediate truncation
+#: edges as (id_a, id_b) pairs, at the operator's own round count
+#: (tree_ancestry's 8 pass two intermediate truncations)
 _FIXPOINT_RUNS = {
     "connected_components": lambda nodes, edges, pairs: graph.connected_components(nodes, pairs),
     "connected_components_star": lambda nodes, edges, pairs: graph.connected_components_star(
@@ -280,14 +277,14 @@ _FIXPOINT_RUNS = {
     ),
     "k_core": lambda nodes, edges, pairs: graph.k_core(pairs, 1),
     "pagerank_int": lambda nodes, edges, pairs: graph.pagerank_int(
-        nodes, graph.out_degree_weighted(edges), n_nodes=20, iterations=5
+        nodes, graph.out_degree_weighted(edges), n_nodes=20
     ),
     "personalized_pagerank_int": lambda nodes, edges, pairs: graph.personalized_pagerank_int(
-        graph.out_degree_weighted(edges), nodes.filter(F.col("id") % 5 == 0), iterations=5
+        graph.out_degree_weighted(edges), nodes.filter(F.col("id") % 5 == 0)
     ),
-    "hits_int": lambda nodes, edges, pairs: graph.hits_int(nodes, edges, rounds=5),
+    "hits_int": lambda nodes, edges, pairs: graph.hits_int(nodes, edges),
     "label_propagation_int": lambda nodes, edges, pairs: graph.label_propagation_int(
-        nodes, edges, rounds=5
+        nodes, edges
     ),
     "tree_ancestry": lambda nodes, edges, pairs: graph.tree_ancestry(
         nodes.select(F.col("id").alias("node"), F.expr("id div 2").alias("parent"))
@@ -379,32 +376,17 @@ def test_sweep_line_boundary_proxy_exact(spark):
     iv = spark.createDataFrame(
         [((i * 13) % 97, (i * 13) % 97 + 5) for i in range(500)], ["s", "e"]
     )
-    base = sweep_line_concurrency(iv, "s", "e", num_partitions=4)
+    base = sweep_line_concurrency(iv, "s", "e")
     # good proxy: the start column itself
     proxy = iv.select(F.col("s").alias("p"))
-    good = sweep_line_concurrency(
-        iv, "s", "e", num_partitions=4, boundary_source=(proxy, "p")
-    )
+    good = sweep_line_concurrency(iv, "s", "e", boundary_source=(proxy, "p"))
     # pathological proxy: constant column -> a single bucket
     bad = sweep_line_concurrency(
-        iv, "s", "e", num_partitions=4,
-        boundary_source=(iv.select(F.lit(0.0).alias("p")), "p"),
+        iv, "s", "e", boundary_source=(iv.select(F.lit(0.0).alias("p")), "p")
     )
     want = sorted(map(tuple, base.collect()))
     assert sorted(map(tuple, good.collect())) == want
     assert sorted(map(tuple, bad.collect())) == want
-
-
-def test_seasonal_decompose_rejects_even_period(spark):
-    from pyspark.sql import functions as F
-
-    from odbc2parquet_spark.operators.drift import seasonal_decompose
-
-    daily = spark.createDataFrame(
-        [(d, float(d)) for d in range(30)], "day long, v double"
-    ).select("day", F.col("v").cast("decimal(18,6)").alias("val_dec"))
-    with pytest.raises(ValueError, match="odd"):
-        seasonal_decompose(daily, period=12)
 
 
 def test_bucketing_date_keys(spark):

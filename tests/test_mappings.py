@@ -177,7 +177,7 @@ def test_time_text_to_int(spark):
     # roundtrip formatting (write-back direction, input.rs:767-793)
     rt = (
         spark.createDataFrame([(334_000_000,)], ["us"])
-        .select(int_to_time_text(F.col("us"), "us").alias("t"))
+        .select(int_to_time_text(F.col("us")).alias("t"))
         .collect()
     )
     assert rt[0].t == "00:05:34.000000"

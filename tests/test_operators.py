@@ -56,10 +56,15 @@ def test_minhash_lsh_pipeline(docs):
 def test_simhash_identical_and_distance(docs):
     sig = {r.id: r.simhash for r in D.simhash(docs).collect()}
     assert sig[1] == sig[2]  # identical text -> identical signature
-    pairs = {(r.id_a, r.id_b): r.hamming for r in D.simhash_near_pairs(D.simhash(docs), 32).collect()}
-    assert pairs[(1, 2)] == 0
+
+    def ham(a, b):
+        return bin((sig[a] ^ sig[b]) & (2**64 - 1)).count("1")
+
     # near-dup differs in fewer bits than the unrelated doc
-    assert pairs[(1, 3)] < pairs[(1, 4)]
+    assert ham(1, 3) < ham(1, 4)
+    pairs = {(r.id_a, r.id_b): r.hamming for r in D.simhash_near_pairs(D.simhash(docs)).collect()}
+    want = {(a, b): ham(a, b) for a in sig for b in sig if a < b and ham(a, b) <= 6}
+    assert pairs == want and pairs[(1, 2)] == 0
 
 
 def test_brute_force_topk_self_similarity(spark):
@@ -151,7 +156,8 @@ def test_simhash_banded_production_spec_zero_recall_loss(docs):
     sig = D.simhash(docs)
     truth = {
         (r.id_a, r.id_b, r.hamming)
-        for r in D.simhash_near_pairs(sig, max_hamming=3).collect()
+        for r in D.simhash_near_pairs(sig).collect()
+        if r.hamming <= 3
     }
     banded = {
         (r.id_a, r.id_b, r.hamming)
@@ -184,8 +190,8 @@ def test_ivf_search_probes_subset(spark):
     rows = [(i, [math.cos(i / 7.0), math.sin(i / 7.0)]) for i in range(40)]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
     cent = S.ivf_seed_centroids(emb, 4)
-    out = S.ivf_search(emb, emb.filter("vec_id = 20"), cent, nprobe=2, k=5).collect()
-    assert len(out) == 5
+    out = S.ivf_search(emb, emb.filter("vec_id = 20"), cent, nprobe=2).collect()
+    assert len(out) == 10
     ranked = [r.neighbor_id for r in sorted(out, key=lambda r: r.rank)]
     # nearest angular neighbors of 20 (within probed cells) come first
     assert set(ranked[:2]) <= {18, 19, 21, 22}
@@ -207,12 +213,13 @@ def test_ivf_refine_centroids_moves_to_mean(spark):
 
 
 def test_resize_images_binary_roundtrip(docs):
-    out = M.resize_images(M.attach_binary(docs), 4, 3).collect()
-    assert all(len(bytes(r.resized)) == 36 for r in out)
+    out = M.resize_images(M.attach_binary(docs)).collect()
+    size = 16 * 12 * 3
+    assert all(len(bytes(r.resized)) == size for r in out)
     by_id = {r.doc_id: r for r in out}
     src = {r.doc_id: r.text.encode() for r in docs.collect()}
     for i, payload in src.items():
-        expect = (payload * (36 // len(payload) + 1))[:36]
+        expect = (payload * (size // len(payload) + 1))[:size]
         assert bytes(by_id[i].resized) == expect
         assert by_id[i].out_checksum == sum(expect) % 1_000_000_007
 
@@ -316,14 +323,18 @@ def test_star_components_random_graph_matches_propagation(spark):
 
 def test_rollup_cascade_matches_direct(spark, sf_dir):
     from odbc2parquet_spark.catalog import load_table
-    from odbc2parquet_spark.operators.rollup import bucket_aggregate, rollup_cascade
+    from odbc2parquet_spark.operators.rollup import rollup_cascade
 
     ev = load_table(spark, sf_dir, "events")
-    cascade_hourly = rollup_cascade(ev)["1 hour"]
-    direct_hourly = bucket_aggregate(ev, "1 hour")
-    a = {(r.bucket_start, r.key): (r.n, r.sum_value) for r in cascade_hourly.collect()}
-    b = {(r.bucket_start, r.key): (r.n, r.sum_value) for r in direct_hourly.collect()}
-    assert a == b  # re-aggregation is exact, level by level
+    cascade = rollup_cascade(ev)
+    for width, secs in (("5 minutes", 300), ("1 hour", 3600), ("1 day", 86400)):
+        start = (F.unix_seconds(F.col("ts").cast("timestamp")) / secs).cast("long") * secs
+        direct = ev.groupBy(start.alias("bucket_start"), F.col("event_type").alias("key")).agg(
+            F.count("*").alias("n"), F.sum(F.col("value").cast("decimal(18,6)")).alias("sum_value")
+        )
+        a = {(r.bucket_start, r.key): (r.n, r.sum_value) for r in cascade[width].collect()}
+        b = {(r.bucket_start, r.key): (r.n, r.sum_value) for r in direct.collect()}
+        assert a == b, width  # re-aggregation is exact, level by level
 
 
 def test_kmv_estimate_accuracy(spark):
@@ -395,7 +406,7 @@ def test_pack_shards_two_pass_equals_window(spark):
     rows = [(i, rng.randrange(1, 400)) for i in range(3000)]
     df = spark.createDataFrame(rows, ["doc_id", "n_tokens"])
     a = {r.doc_id: r.shard for r in pack_shards(df, 1000).collect()}
-    b = {r.doc_id: r.shard for r in pack_shards_two_pass(df, 1000, num_partitions=7).collect()}
+    b = {r.doc_id: r.shard for r in pack_shards_two_pass(df, 1000).collect()}
     assert a == b
     # shards are contiguous in doc order and sized near the budget
     assert max(a.values()) > 100
@@ -502,23 +513,22 @@ def test_chunk_documents_windows(spark):
 
     from odbc2parquet_spark.operators.text import chunk_documents
 
+    words = [str(i) for i in range(60)]
     docs = spark.createDataFrame(
-        [(1, " ".join(str(i) for i in range(10))), (2, "one"), (3, "")],
+        [(1, " ".join(words)), (2, "one"), (3, "")],
         ["doc_id", "text"],
     )
-    out = chunk_documents(docs, chunk_tokens=4, overlap=2).collect()
+    out = chunk_documents(docs).collect()
     rows = {(r.doc_id, r.chunk_id): r for r in out}
-    # doc 1: starts 1,3,5,7,9 -> sizes 4,4,4,4,2
-    sizes = [rows[(1, i)].n_tokens for i in range(5)]
-    assert sizes == [4, 4, 4, 4, 2]
-    first = " ".join(str(i) for i in range(4))
-    assert rows[(1, 0)].chunk_hash == hashlib.md5(first.encode()).hexdigest()
+    # doc 1: 32-token windows every 32 - 8 = 24 tokens: 0-based starts
+    # 0, 24, 48 -> sizes 32, 32, 12
+    want = [words[s:s + 32] for s in range(0, 60, 24)]
+    assert [rows[(1, i)].n_tokens for i in range(len(want))] == [32, 32, 12]
+    assert (1, len(want)) not in rows
+    for i, chunk in enumerate(want):
+        assert rows[(1, i)].chunk_hash == hashlib.md5(" ".join(chunk).encode()).hexdigest()
     assert rows[(2, 0)].n_tokens == 1
     assert (3, 0) not in rows  # empty doc -> no chunks
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        chunk_documents(docs, chunk_tokens=4, overlap=4)
 
 
 def test_parse_image_header_real_formats():
@@ -579,18 +589,28 @@ def test_repeated_ngram_stats_cross_doc_only(spark):
 
     docs = spark.createDataFrame(
         [
-            (1, "a b c d e"),          # shares "a b c" with doc 2
-            (2, "a b c x y"),
-            (3, "p q r p q r p q r"),  # internal repetition only
-            (4, "zz"),                 # too short for any 3-gram
+            (1, "a b c d e f g h i j"),        # shares "a .. h" with doc 2
+            (2, "a b c d e f g h x y"),
+            (3, "p q r s t u v w p q r s t u v w"),  # internal repetition only
+            (4, "zz"),                         # too short for any 8-gram
         ],
         ["doc_id", "text"],
     )
-    out = {r.doc_id: r for r in repeated_ngram_stats(docs, n=3).collect()}
-    assert out[1].n_grams == 3 and out[1].n_dup_grams == 1
-    assert out[2].n_grams == 3 and out[2].n_dup_grams == 1
+    grams = {
+        r.doc_id: [tuple(r.text.split()[i:i + 8]) for i in range(len(r.text.split()) - 7)]
+        for r in docs.collect()
+    }
+    docs_of = {}
+    for d, gs in grams.items():
+        for g in gs:
+            docs_of.setdefault(g, set()).add(d)
+    out = {r.doc_id: r for r in repeated_ngram_stats(docs).collect()}
+    for d, gs in grams.items():
+        assert out[d].n_grams == len(gs)
+        assert out[d].n_dup_grams == sum(len(docs_of[g]) >= 2 for g in gs)
+    assert out[1].n_dup_grams == out[2].n_dup_grams == 1
     # within-doc repeats must NOT count as duplication
-    assert out[3].n_grams == 7 and out[3].n_dup_grams == 0
+    assert out[3].n_grams == 9 and out[3].n_dup_grams == 0
     assert out[4].n_grams == 0 and out[4].dup_frac == 0.0
 
 
@@ -612,10 +632,13 @@ def test_label_centroids_and_outliers(spark):
     cents = {(r.label, r.dim): r.c for r in label_centroids(vecs).collect()}
     assert cents[(0, 0)] == cents[(0, 1)] == 4.0
     assert cents[(1, 0)] == 1.0 and cents[(1, 1)] == -1.0
-    top = centroid_outliers(vecs, top_k=1).collect()
-    by_label = {r.label: r for r in top}
-    assert by_label[0].vec_id == 3 and by_label[0].rk == 1
-    assert by_label[1].vec_id == 4 and by_label[1].dist == 0.0
+    top = centroid_outliers(vecs).collect()
+    # fewer than 20 per label: every vector is listed, farthest first
+    # (distances to (4, 4): 3 -> sqrt(72), 1 -> sqrt(32), 2 -> sqrt(8))
+    order = {lab: [r.vec_id for r in sorted(top, key=lambda r: r.rk) if r.label == lab] for lab in (0, 1)}
+    assert order == {0: [3, 1, 2], 1: [4]}
+    by_id = {r.vec_id: r for r in top}
+    assert by_id[3].dist == round(72 ** 0.5, 4) and by_id[4].dist == 0.0
 
 
 def test_incremental_minhash_dedup_gates_near_dups(spark):
@@ -685,22 +708,28 @@ def test_resample_forward_fill_gaps(spark):
 def test_pq_codes_pick_nearest_subspace_centroid(spark):
     from odbc2parquet_spark.operators.similarity import pq_assign, pq_codebook
 
-    # dim=4, m=2 subspaces of 2; seeds = vecs 0 and 1
+    # 8 subspaces of 8: the even ones repeat the first 2-value pattern
+    # below 4 times, the odd ones the second (distances scale by 4,
+    # nearest centroids do not change); seeds = vecs 0 and 1
     vecs = spark.createDataFrame(
         [
-            (0, [0.0, 0.0, 10.0, 10.0]),
-            (1, [5.0, 5.0, 0.0, 0.0]),
-            (2, [0.1, 0.1, 0.2, 0.1]),   # sub0 near seed0, sub1 near seed1
-            (3, [4.9, 5.2, 9.0, 9.0]),   # sub0 near seed1, sub1 near seed0
+            (i, (v[:2] * 4 + v[2:] * 4) * 4)
+            for i, v in [
+                (0, [0.0, 0.0, 10.0, 10.0]),
+                (1, [5.0, 5.0, 0.0, 0.0]),
+                (2, [0.1, 0.1, 0.2, 0.1]),   # sub0 near seed0, sub1 near seed1
+                (3, [4.9, 5.2, 9.0, 9.0]),   # sub0 near seed1, sub1 near seed0
+            ]
         ],
         ["vec_id", "embedding"],
     )
-    cb = pq_codebook(vecs, m=2, k=2, dim=4)
-    out = {(r.vec_id, r.subspace): r.code for r in pq_assign(vecs, cb, m=2, dim=4).collect()}
-    assert out[(2, 0)] == 0 and out[(2, 1)] == 1
-    assert out[(3, 0)] == 1 and out[(3, 1)] == 0
-    # self-coding: a seed's own slices code to itself (distance 0)
-    assert out[(0, 0)] == 0 and out[(0, 1)] == 0
+    cb = pq_codebook(vecs, k=2)
+    out = {(r.vec_id, r.subspace): r.code for r in pq_assign(vecs, cb).collect()}
+    for even, odd in ((0, 1), (2, 3), (4, 5), (6, 7)):
+        assert out[(2, even)] == 0 and out[(2, odd)] == 1
+        assert out[(3, even)] == 1 and out[(3, odd)] == 0
+        # self-coding: a seed's own slices code to itself (distance 0)
+        assert out[(0, even)] == 0 and out[(0, odd)] == 0
 
 
 def test_pq_assign_kernel_bit_exact_vs_expression_spec(spark, sf_dir):
@@ -714,11 +743,11 @@ def test_pq_assign_kernel_bit_exact_vs_expression_spec(spark, sf_dir):
     from odbc2parquet_spark.operators.similarity import pq_assign, pq_codebook
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    m, sub, dim = 16, 4, 64
-    cb = pq_codebook(emb, m=m, k=24, dim=dim)
+    m, sub = 16, 4
+    cb = pq_codebook(emb, m=m, k=24)
     got = {
         (r.vec_id, r.subspace): (r.code, r.dist4)
-        for r in pq_assign(emb, cb, m=m, dim=dim).collect()
+        for r in pq_assign(emb, cb, m=m).collect()
     }
     # independent spec: expression-level melt + struct-min on raw d2
     melted = emb.select(
@@ -763,24 +792,29 @@ def test_pq_adc_search_finds_exact_match_and_rejects_lossy_split(spark):
 
     from odbc2parquet_spark.operators.similarity import pq_adc_topk
 
-    # dim=4, m=2; vec 5 is identical to probe 0 -> ADC distance 0, rank 1
+    # 8 subspaces of 8; vec 5 is identical to probe 0 -> ADC distance 0,
+    # rank 1
     vecs = spark.createDataFrame(
         [
-            (0, [0.0, 0.0, 10.0, 10.0]),
-            (1, [5.0, 5.0, 0.0, 0.0]),
-            (2, [9.0, 9.0, 9.0, 9.0]),
-            (5, [0.0, 0.0, 10.0, 10.0]),
+            (i, (v[:2] * 4 + v[2:] * 4) * 4)
+            for i, v in [
+                (0, [0.0, 0.0, 10.0, 10.0]),
+                (1, [5.0, 5.0, 0.0, 0.0]),
+                (2, [9.0, 9.0, 9.0, 9.0]),
+                (5, [0.0, 0.0, 10.0, 10.0]),
+            ]
         ],
         ["vec_id", "embedding"],
     )
     probes = vecs.filter("vec_id = 0")
     out = {r.rank: (r.neighbor_id, r.adc4) for r in
-           pq_adc_topk(vecs, probes, m=2, k_centroids=2, dim=4, top_k=3).collect()}
+           pq_adc_topk(vecs, probes, k_centroids=2).collect()}
     assert out[1] == (5, 0.0)  # the exact duplicate codes identically
-    # a lossy subspace split (dim not divisible by m) must error, not
+    assert sorted(out) == [1, 2, 3]  # the three other vectors, within the top 10
+    # a lossy subspace split (64 not divisible by m) must error, not
     # silently drop trailing dimensions
     with pytest.raises(ValueError, match="divisible"):
-        pq_adc_topk(vecs, probes, m=3, k_centroids=2, dim=4)
+        pq_adc_topk(vecs, probes, m=3, k_centroids=2)
 
 
 def test_count_min_sketch_never_undercounts(spark):
@@ -788,9 +822,9 @@ def test_count_min_sketch_never_undercounts(spark):
 
     rows = [(w,) for w in ["a"] * 50 + ["b"] * 7 + ["c"] * 1]
     df = spark.createDataFrame(rows, ["w"])
-    sk = count_min_sketch(df, "w", width=8)  # tiny width forces collisions
+    sk = count_min_sketch(df, "w")
     probes = spark.createDataFrame([("a",), ("b",), ("c",), ("zzz",)], ["value"])
-    est = {r.value: r.est for r in cms_estimate(sk, probes, width=8).collect()}
+    est = {r.value: r.est for r in cms_estimate(sk, probes).collect()}
     assert est["a"] >= 50 and est["b"] >= 7 and est["c"] >= 1  # CMS never undercounts
     assert est["a"] <= 58                                       # bounded by stream size
     assert est["zzz"] >= 0                                      # absent key: collision noise only
@@ -834,16 +868,12 @@ def test_canonical_representatives_keep_best(spark):
 def test_knn_graph_ranks_and_symmetry(spark):
     from odbc2parquet_spark.operators.similarity import knn_graph
 
-    # three near-identical vectors + one orthogonal: the near trio should
+    # seven near-identical vectors + one orthogonal: the near group should
     # rank each other first wherever LSH buckets them together
-    rows = [
-        (0, [1.0, 0.0, 0.0, 0.0]),
-        (1, [0.99, 0.1, 0.0, 0.0]),
-        (2, [0.98, 0.15, 0.0, 0.0]),
-        (3, [0.0, 0.0, 1.0, 0.0]),
-    ]
+    rows = [(i, [1.0 - 0.01 * i, 0.02 * i, 0.0, 0.0]) for i in range(7)]
+    rows.append((7, [0.0, 0.0, 1.0, 0.0]))
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    got = knn_graph(df, k=2, n_planes=8, dim=4, prefix_bits=4).collect()
+    got = knn_graph(df, n_planes=8, dim=4).collect()
     by_src = {}
     for r in got:
         by_src.setdefault(r["vec_id"], []).append(r)
@@ -851,11 +881,10 @@ def test_knn_graph_ranks_and_symmetry(spark):
         ranks = sorted(x["rank"] for x in lst)
         assert ranks == list(range(1, len(lst) + 1))
         assert all(x["neighbor_id"] != src for x in lst)
-        assert len(lst) <= 2
-    # vectors 0,1,2 project identically on any hyperplane set -> same
-    # bucket, so each of them must list another of the trio at rank 1
+        assert len(lst) <= 5
+    # a near vector that shares a bucket lists another near vector at rank 1
     if 0 in by_src:
-        assert by_src[0][0]["neighbor_id"] in (1, 2)
+        assert min(by_src[0], key=lambda x: x["rank"])["neighbor_id"] in range(1, 7)
 
 
 def test_pagerank_int_mass_and_ordering(spark):
@@ -917,22 +946,34 @@ def test_personalized_pagerank_frontier_and_floor(spark):
 
 
 def test_neg_sample_table_exact_apportionment(spark):
+    import math
+
     from odbc2parquet_spark.operators.text import neg_sample_table
 
     docs = spark.createDataFrame(
         [(0, "a " * 81 + "b"), (1, "b " * 15 + "c c c")],
         ["doc_id", "text"],
     )
-    rows = neg_sample_table(docs, table_size=100).collect()
+    rows = neg_sample_table(docs).collect()
     by_w = {r["w"]: r for r in rows}
-    # slots sum EXACTLY to the table size (largest-remainder property)
-    assert sum(r["n_draws"] for r in rows) == 100
+    # slots sum EXACTLY to the 1000-slot table (largest-remainder property)
+    assert sum(r["n_draws"] for r in rows) == 1000
     # count^(3/4) flattening: a has 81 occurrences -> weight 27; b has
     # 16 -> 8; c has 3 -> 3^0.75 ~ 2.28. a gets most but far less than
     # its 81/100 count share
     assert by_w["a"]["n_draws"] > by_w["b"]["n_draws"] > by_w["c"]["n_draws"]
-    assert by_w["a"]["n_draws"] < 81
+    assert by_w["a"]["n_draws"] < 810
     assert by_w["c"]["n_draws"] >= 1  # rare word stays reachable
+    # Hamilton apportionment of 1000 slots over the micro-weights
+    micro = {w: round(math.sqrt(c) * math.sqrt(math.sqrt(c)) * 1e6) for w, c in
+             {"a": 81, "b": 16, "c": 3}.items()}
+    tot = sum(micro.values())
+    base = {w: 1000 * m // tot for w, m in micro.items()}
+    by_rem = sorted(micro, key=lambda w: (-(1000 * micro[w] % tot), w))
+    extra = set(by_rem[: 1000 - sum(base.values())])
+    assert {w: r["n_draws"] for w, r in by_w.items()} == {
+        w: base[w] + (w in extra) for w in micro
+    }
 
 
 def test_stupid_backoff_longest_match_and_oov(spark):
@@ -1025,10 +1066,12 @@ def test_mp4_roundtrip_and_rejects():
 
 
 def test_epoch_shuffle_is_per_epoch_permutation(spark):
+    import hashlib
+
     from odbc2parquet_spark.operators.sharding import epoch_shuffle
 
     docs = spark.createDataFrame([(i,) for i in range(100)], ["doc_id"])
-    out = epoch_shuffle(docs, n_shards=4).collect()
+    out = epoch_shuffle(docs).collect()
     by_epoch = {}
     for r in out:
         by_epoch.setdefault(r["epoch"], []).append(r)
@@ -1040,7 +1083,11 @@ def test_epoch_shuffle_is_per_epoch_permutation(spark):
         shards = {}
         for r in rows:
             shards.setdefault(r["shard"], []).append(r["pos"])
-        assert set(shards) <= set(range(4))
+        assert set(shards) <= set(range(8))
+        assert all(
+            r["shard"] == int(hashlib.md5(f"{epoch}:{r['doc_id']}".encode()).hexdigest()[:8], 16) % 8
+            for r in rows
+        )
         for poss in shards.values():
             assert sorted(poss) == list(range(1, len(poss) + 1))
     # epochs produce different orders (md5 keys differ per epoch)
@@ -1072,11 +1119,12 @@ def test_binned_quantiles_within_bin_width(spark):
 
     vals = [i / 100.0 for i in range(1, 101)]  # 0.01 .. 1.00
     df = spark.createDataFrame([("a", v) for v in vals], ["g", "v"])
-    row = binned_quantiles(df, ["g"], "v", quantiles=(0.5, 0.95)).collect()[0]
+    row = binned_quantiles(df, ["g"], "v").collect()[0]
     assert row["n"] == 100
-    # true p50 = 0.50, p95 = 0.95; estimate within one bin width
+    # true p50 = 0.50, p95 = 0.95, p99 = 0.99; estimate within one bin width
     assert abs(row["p50"] - 0.50) <= 0.01 + 1e-9
     assert abs(row["p95"] - 0.95) <= 0.01 + 1e-9
+    assert abs(row["p99"] - 0.99) <= 0.01 + 1e-9
 
 
 def test_multiprobe_superset_of_single_bucket(spark):
@@ -1085,8 +1133,8 @@ def test_multiprobe_superset_of_single_bucket(spark):
     rows = [(i, [math.cos(i / 9.0 + d / 50.0) for d in range(8)]) for i in range(60)]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
     sig = S.lsh_signatures(emb, 8, 8)
-    single = {(r.id_a, r.id_b) for r in S.lsh_bucket_pairs(sig, prefix_bits=4).collect()}
-    multi = {(r.id_a, r.id_b) for r in S.lsh_multiprobe_pairs(sig, prefix_bits=4).collect()}
+    single = {(r.id_a, r.id_b) for r in S.lsh_bucket_pairs(sig).collect()}
+    multi = {(r.id_a, r.id_b) for r in S.lsh_multiprobe_pairs(sig).collect()}
     assert single <= multi          # probing can only ADD candidates
     assert len(multi) >= len(single)
 
@@ -1113,13 +1161,11 @@ def test_semantic_dedup_cells_prunes_lowest_id_wins(spark):
             (2, [0.0, 1.0]),
             (3, [1.0, 0.01]),   # cell of 1, near-dup of 1 -> pruned
             (4, [0.0, 1.0]),    # exact dup of 2 -> pruned, 2 kept
-            (7, [-1.0, 0.5]),   # assigned to cell 2, cos(7,2)=0.447 -> kept
+            (7, [-1.0, 0.3]),   # assigned to cell 2, cos(7,2)=0.287 < 0.4 -> kept
         ],
         ["vec_id", "embedding"],
     )
-    out = semantic_dedup_cells(
-        vecs, ivf_seed_centroids(vecs, 2), threshold=0.95
-    ).collect()
+    out = semantic_dedup_cells(vecs, ivf_seed_centroids(vecs, 2)).collect()
     kept = {r.vec_id for r in out if r.kept}
     assert kept == {1, 2, 7}
     cells = {r.vec_id: r.cell for r in out}
@@ -1408,9 +1454,9 @@ def test_resize_bmp_nearest_samples_expected_pixels(spark):
     # 2x2 image, constant source byte 5 -> every sampled byte is 5
     bmp = synth_bmp(bytes([5]), 2, 2)
     df = spark.createDataFrame([(1, bytearray(bmp))], ["doc_id", "payload"])
-    row = resize_bmp_nearest(df, out_w=2, out_h=2).collect()[0]
-    expect = hashlib.md5(",".join(["5"] * 12).encode()).hexdigest()
-    assert (row.out_w, row.out_h, row.digest) == (2, 2, expect)
+    row = resize_bmp_nearest(df).collect()[0]
+    expect = hashlib.md5(",".join(["5"] * (4 * 3 * 3)).encode()).hexdigest()
+    assert (row.out_w, row.out_h, row.digest) == (4, 3, expect)
 
 
 def test_mp4_sample_table_roundtrip_and_bounds(spark):
@@ -1496,42 +1542,46 @@ def test_span_scrub_overlapping_spans_union_positions(spark):
 
 
 def test_zorder_buckets_are_tight_rectangles(spark):
-    """On a full 32x32 grid with 5-bit cells, 16 consecutive curve runs
-    must each hold exactly 64 points inside an exact 8x8 rectangle —
-    the defining locality property of the Morton curve."""
+    """On a full 32x32 grid, the 64 consecutive curve runs (the top 6 of
+    the 20 key bits: 3 bits per axis) must each hold exactly 16 points
+    inside an exact 4x4 rectangle (32 / 2^3 per side) — the defining
+    locality property of the Morton curve."""
     from odbc2parquet_spark.operators.clustering import zorder_bucket_stats
 
     pts = spark.createDataFrame(
         [(x, y) for x in range(32) for y in range(32)], ["x", "y"]
     )
-    rows = zorder_bucket_stats(pts, "x", "y", bits=5, bucket_bits=4).collect()
-    assert len(rows) == 16
+    rows = zorder_bucket_stats(pts, "x", "y").collect()
+    side = 32 // 2**3
+    assert len(rows) == (32 // side) ** 2
     for r in rows:
-        assert r.n_rows == 64
-        assert r.x_max - r.x_min == 7 and r.y_max - r.y_min == 7
+        assert r.n_rows == side * side
+        assert r.x_max - r.x_min == side - 1 and r.y_max - r.y_min == side - 1
 
 
 def test_zorder_key_interleaves_bits(spark):
-    """(0,0)->0 (1,0)->1 (0,1)->2 (1,1)->3 on a 2x2 domain."""
+    """On a 2x2 domain each coordinate lands in the top cell bit (9 of
+    10: v * 2^10 div 2), so x is key bit 18 and y key bit 19."""
     from odbc2parquet_spark.operators.clustering import zorder_key
 
     pts = spark.createDataFrame([(0, 0), (1, 0), (0, 1), (1, 1)], ["x", "y"])
-    got = {(r.x, r.y): r.zkey for r in zorder_key(pts, "x", "y", bits=1).collect()}
-    assert got == {(0, 0): 0, (1, 0): 1, (0, 1): 2, (1, 1): 3}
+    got = {(r.x, r.y): r.zkey for r in zorder_key(pts, "x", "y").collect()}
+    assert got == {(x, y): (x << 18) | (y << 19) for x in (0, 1) for y in (0, 1)}
 
 
 def test_skew_profile_flags_hot_key_and_salt(spark):
     """One key holding half the rows gets rank 1, skew_ratio ~ n_keys/2
-    and a salt factor of ~parallelism/2."""
+    and a salt factor of half the 32 reducers."""
     from odbc2parquet_spark.operators.joins import skew_profile
 
     rows = [(0,)] * 50 + [(k,) for k in range(1, 51)]
     df = spark.createDataFrame(rows, ["k"])
-    out = {r.hot_rank: r for r in skew_profile(df, "k", top_n=3, parallelism=8).collect()}
+    out = {r.hot_rank: r for r in skew_profile(df, "k").collect()}
+    assert sorted(out) == [1, 2, 3, 4, 5]
     assert out[1].key == "0" and out[1].cnt == 50
     assert out[1].n_keys == 51 and out[1].total_rows == 100
-    assert out[1].suggested_salt == 4  # ceil(50*8/100)
-    assert out[2].cnt == 1 and out[2].suggested_salt == 1
+    assert out[1].suggested_salt == 16  # ceil(50*32/100)
+    assert out[2].cnt == 1 and out[2].suggested_salt == 1  # ceil(1*32/100)
 
 
 def test_skew_profile_string_keys_survive(spark):
@@ -1542,7 +1592,7 @@ def test_skew_profile_string_keys_survive(spark):
 
     rows = [("us-east",)] * 10 + [("eu-west",)] * 5 + [("ap-south",)]
     df = spark.createDataFrame(rows, ["region"])
-    out = {r.hot_rank: r.key for r in skew_profile(df, "region", top_n=3).collect()}
+    out = {r.hot_rank: r.key for r in skew_profile(df, "region").collect()}
     assert out == {1: "us-east", 2: "eu-west", 3: "ap-south"}
 
 
@@ -1655,10 +1705,12 @@ def test_mmr_prefers_diverse_over_redundant(spark):
         (3, [0.6, 0.0, 0.8]),     # less relevant, orthogonal-ish
     ]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out = mmr_rerank(emb, emb.filter("vec_id = 0"), k_cand=3, k_sel=2)
+    out = mmr_rerank(emb, emb.filter("vec_id = 0"))
     got = {r.step: r.vec_id for r in out.collect()}
     assert got[1] == 1          # pure relevance, min-id tiebreak over the dup
     assert got[2] == 3          # diversity beats the redundant duplicate
+    # the duplicate is the last candidate; the fourth step has none left
+    assert got == {1: 1, 2: 3, 3: 2}
 
 
 def test_bpe_learn_merges_most_frequent_pair_first(spark):
@@ -1766,14 +1818,13 @@ def test_resample_interpolate_straight_line_and_edges(spark):
     import datetime
     from odbc2parquet_spark.operators.rollup import resample_interpolate
 
-    day = 86400
     rows = [
         (1, 7, datetime.datetime(2024, 1, 1), 10.0),
         (2, 7, datetime.datetime(2024, 1, 4), 40.0),
     ]
     ev = spark.createDataFrame(rows, ["event_id", "user_id", "ts", "value"])
     out = {r.bucket - 19723: (r.value, r.kind)
-           for r in resample_interpolate(ev, bucket_seconds=day).collect()}
+           for r in resample_interpolate(ev).collect()}
     assert out[0] == (10.0, "observed")
     assert out[1] == (20.0, "interp")
     assert out[2] == (30.0, "interp")
@@ -1802,14 +1853,27 @@ def test_group_split_never_straddles_duplicate_pairs(spark, sf_dir):
 def test_bloom_semi_join_equals_plain_semi_join(spark):
     """Bloom pre-filter must not change semantics: exact equality with the
     plain semi-join, including keys that hash-collide into the filter."""
+    import hashlib
+
     from odbc2parquet_spark.operators.joins import bloom_semi_join
 
-    big = spark.createDataFrame([(i, f"r{i}") for i in range(500)], ["k", "v"])
-    small = spark.createDataFrame([(i * 7,) for i in range(20)], ["sk"])
-    got = sorted(r.k for r in bloom_semi_join(big, small, "k", "sk", m_bits=256).collect())
+    keys = [i * 7 for i in range(1000)]
+    big = spark.createDataFrame([(i, f"r{i}") for i in range(3000)], ["k", "v"])
+    small = spark.createDataFrame([(k,) for k in keys], ["sk"])
+    got = sorted(r.k for r in bloom_semi_join(big, small, "k", "sk").collect())
     want = sorted(r.k for r in big.join(
         small.withColumnsRenamed({"sk": "k"}), "k", "left_semi").collect())
-    assert got == want and len(got) == 20
+    assert got == want and len(got) == 3000 // 7 + 1
+
+    # the 4096-bit filter (md5 two-hash, 3 probes) lets some non-members
+    # through, so the exact join after it is what removed them
+    def positions(k):
+        h = hashlib.md5(str(k).encode()).hexdigest()
+        h1, h2 = int(h[:15], 16), int(h[15:30], 16)
+        return {(h1 + j * h2) % 4096 for j in range(3)}
+
+    bits = set().union(*map(positions, keys))
+    assert any(positions(k) <= bits for k in range(3000) if k % 7)
 
 
 def test_hash_embed_unit_norm_and_determinism(spark):
@@ -1818,7 +1882,7 @@ def test_hash_embed_unit_norm_and_determinism(spark):
     docs = spark.createDataFrame(
         [(1, "a b c d e f"), (2, "a b c d e f"), (3, "")], ["doc_id", "text"]
     )
-    rows = {r.doc_id: r for r in hash_embed(docs, dim=8).collect()}
+    rows = {r.doc_id: r for r in hash_embed(docs).collect()}
     assert rows[1].vec_hash == rows[2].vec_hash     # content-deterministic
     assert rows[1].nnz > 0
     import hashlib
@@ -2034,7 +2098,7 @@ def test_pps_sample_partitioning_independent(spark):
     a = {(r.doc_id, r.n_hits) for r in pps_sample(df, "w", 50).collect()}
     b = {
         (r.doc_id, r.n_hits)
-        for r in pps_sample(df.repartition(17), "w", 50, num_partitions=5).collect()
+        for r in pps_sample(df.repartition(17), "w", 50).collect()
     }
     assert a == b and sum(h for _, h in a) == 50
 
@@ -2127,26 +2191,26 @@ def test_pq_refine_reduces_distortion(spark):
     rng = random.Random(7)
     rows = []
     for i in range(64):
-        center = [float(rng.choice([0, 10]))] * 16
+        center = [float(rng.choice([0, 10]))] * 64
         rows.append((i, [c + rng.uniform(-1, 1) for c in center]))
     vecs = spark.createDataFrame(rows, ["vec_id", "embedding"]).select(
         "vec_id", F.col("embedding").cast("array<float>").alias("embedding")
     )
-    cb0 = S.pq_codebook(vecs, m=2, k=4, dim=16)
-    cb1 = S.pq_refine_codebook(vecs, cb0, m=2, dim=16)
+    cb0 = S.pq_codebook(vecs, k=4)
+    cb1 = S.pq_refine_codebook(vecs, cb0)
 
     def distortion(cb):
         return (
-            S.pq_assign(vecs, cb, m=2, dim=16)
+            S.pq_assign(vecs, cb)
             .agg(F.sum("dist4").cast("double"))
             .collect()[0][0]
         )
 
     d0, d1 = distortion(cb0), distortion(cb1)
     assert d1 <= d0
-    # refined centroids keep the subspace layout: 2 subspaces, <= 4 cells
+    # refined centroids keep the subspace layout: 8 subspaces, <= 4 cells
     per_sub = {r.subspace: r.n for r in cb1.groupBy("subspace").agg(F.count("*").alias("n")).collect()}
-    assert set(per_sub) == {0, 1} and all(n <= 4 for n in per_sub.values())
+    assert set(per_sub) == set(range(8)) and all(n <= 4 for n in per_sub.values())
 
 
 def test_winsorize_clamps_to_group_band(spark):
@@ -2186,27 +2250,25 @@ def test_km_hazard_table_known_values(spark):
 
 
 def test_ab_assign_deterministic_and_unit_stable(spark):
-    """Assignment is a pure function of (salt, key): stable across
-    partitionings, different across salts, and every key lands in a
-    valid arm."""
-    import pytest as _pytest
+    """Assignment is a pure function of the key: the md5 slot of
+    "exp:<key>" recomputed here, stable across partitionings, and every
+    key lands in one of the two arms."""
+    import hashlib
 
     from odbc2parquet_spark.operators.sampling import ab_assign
 
     df = spark.createDataFrame([(i,) for i in range(200)], ["uid"])
-    a1 = {r.uid: r.variant for r in ab_assign(df, "uid", salt="e1").collect()}
+    a1 = {r.uid: r.variant for r in ab_assign(df, "uid").collect()}
     a2 = {
         r.uid: r.variant
-        for r in ab_assign(df.repartition(7), "uid", salt="e1").collect()
+        for r in ab_assign(df.repartition(7), "uid").collect()
     }
-    b = {r.uid: r.variant for r in ab_assign(df, "uid", salt="e2").collect()}
-    assert a1 == a2
+    want = {
+        i: "AB"[int(hashlib.md5(f"exp:{i}".encode()).hexdigest()[:15], 16) % 2]
+        for i in range(200)
+    }
+    assert a1 == a2 == want
     assert set(a1.values()) == {"A", "B"}
-    assert a1 != b  # a different experiment reshuffles arms
-    three = {r.variant for r in ab_assign(df, "uid", n_variants=3).collect()}
-    assert three == {"A", "B", "C"}
-    with _pytest.raises(ValueError):
-        ab_assign(df, "uid", n_variants=1)
 
 
 def test_nest_children_roundtrip_nested_parquet(spark, tmp_path):
@@ -2252,30 +2314,29 @@ def test_k_anonymity_audit_finds_small_groups(spark):
 
 
 def test_tree_ancestry_chain_and_forest(spark):
-    """A 10-deep chain resolves root/depth exactly (well past one
-    doubling round), a second root's subtree stays separate, and a
-    depth > 2^rounds chain is the documented limitation."""
+    """A 300-deep chain resolves root/depth exactly up to depth 2^8 (the
+    8 doubling rounds), a second root's subtree stays separate, and the
+    nodes deeper than 256 are the documented limitation: they come back
+    2^8 hops up the chain, not yet at the root."""
     from odbc2parquet_spark.operators.graph import tree_ancestry
 
-    chain = [(0, 0)] + [(i, i - 1) for i in range(1, 11)]
-    forest = chain + [(100, 100), (101, 100), (102, 101)]
+    chain = [(0, 0)] + [(i, i - 1) for i in range(1, 301)]
+    forest = chain + [(1000, 1000), (1001, 1000), (1002, 1001)]
     df = spark.createDataFrame(forest, ["node", "parent"])
     out = {r.node: (r.root_key, r.depth) for r in tree_ancestry(df).collect()}
-    assert out[0] == (0, 0)
-    assert out[10] == (0, 10)
-    assert out[5] == (0, 5)
-    assert out[100] == (100, 0) and out[102] == (100, 2)
-    # rounds=2 covers depth <= 4 only: node 10 has NOT converged to root 0
-    shallow = {r.node: (r.root_key, r.depth) for r in tree_ancestry(df, rounds=2).collect()}
-    assert shallow[10] == (6, 4)  # 2^2 hops up the chain, not yet at root
-    assert shallow[4] == (0, 4)
+    assert {i: out[i] for i in range(301)} == {
+        i: (max(i - 2**8, 0), min(i, 2**8)) for i in range(301)
+    }
+    assert out[10] == (0, 10) and out[300] == (44, 256)
+    assert out[1000] == (1000, 0) and out[1002] == (1000, 2)
 
 
 @pytest.mark.slow
 def test_sweep_line_concurrency_known_peak(spark):
     """Three overlapping intervals: concurrency peaks at 3 inside the
     triple overlap; an end and a start at the same instant do NOT
-    overlap (end applies first); partitioning never changes the sweep."""
+    overlap (end applies first); the input partitioning never changes
+    the sweep."""
     from odbc2parquet_spark.operators.ranges import sweep_line_concurrency
 
     iv = [(0, 10), (5, 15), (8, 12), (15, 20)]  # (15,20) abuts (5,15)
@@ -2289,7 +2350,7 @@ def test_sweep_line_concurrency_known_peak(spark):
     }
     # end of (5,15) drops to N, then start of (15,20) returns to N+1 = 1->...
     assert (1, 1) in at15  # the start at 15 sees concurrency 1, not 2
-    reparted = sweep_line_concurrency(df.repartition(5), "s", "e", num_partitions=3)
+    reparted = sweep_line_concurrency(df.repartition(5), "s", "e")
     assert {tuple(r) for r in reparted.collect()} == {tuple(r) for r in out.collect()}
 
 
@@ -2414,11 +2475,11 @@ def test_target_encode_loo_excludes_own_row(spark):
         [(1, "a", 10.0), (2, "a", 20.0), (3, "a", 30.0), (4, "b", 100.0)],
         ["id", "cat", "y"],
     )
-    out = {r.id: r.enc_loo for r in target_encode_loo(df, "cat", "y", prior_weight=2.0).collect()}
+    out = {r.id: r.enc_loo for r in target_encode_loo(df, "cat", "y").collect()}
     gmean = 160.0 / 4
-    # row 1: (20+30 + 2*40) / (3-1+2) = 130/4
-    assert abs(out[1] - 130.0 / 4) < 1e-6
-    # singleton category: (0 + 2*40) / (1-1+2) = global mean exactly
+    # row 1: (20+30 + 20*40) / (3-1+20) = 850/22
+    assert abs(out[1] - 850.0 / 22) < 1e-6
+    # singleton category: (0 + 20*40) / (1-1+20) = global mean exactly
     assert abs(out[4] - gmean) < 1e-6
 
 
@@ -2444,37 +2505,6 @@ def test_prefix_jaccard_matches_all_pairs(spark, sf_dir):
     }
     want = {(r.id_a, r.id_b) for r in jaccard_pairs(sh, threshold=0.5).collect()}
     assert got == want and len(want) > 0
-
-
-def test_prefix_jaccard_bucket_cap_semantics(spark):
-    """The verification-budget knob: capped output is a SUBSET of the
-    exact pair set with identical jaccard values (precision untouched —
-    the verify join stays exact), a generous cap reproduces the exact
-    result, and a tight cap actually drops candidates on a corpus with
-    one pathologically hot prefix bucket."""
-    from odbc2parquet_spark.operators.dedup import prefix_jaccard_pairs
-
-    # 40 near-identical docs sharing shingles c0..c8 (one hot bucket per
-    # shingle) plus a per-doc unique shingle to vary sizes slightly
-    rows = []
-    for d in range(40):
-        rows += [(d, f"c{i}") for i in range(9)] + [(d, f"u{d}")]
-    sh = spark.createDataFrame(rows, "id long, g string")
-    exact = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in prefix_jaccard_pairs(sh).collect()
-    }
-    loose = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in prefix_jaccard_pairs(sh, bucket_cap=64).collect()
-    }
-    tight = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in prefix_jaccard_pairs(sh, bucket_cap=4).collect()
-    }
-    assert loose == exact and len(exact) > 100
-    assert set(tight) < set(exact) and len(tight) > 0
-    assert all(exact[p] == j for p, j in tight.items())
 
 
 def test_prefix_jaccard_exact_boundary_t08(spark):
@@ -2547,15 +2577,19 @@ def test_kth_smallest_exact_selection(spark):
 
 def test_purged_time_split_embargo_gap(spark):
     """The purged band sits strictly between train max and test min, and
-    is at least the embargo wide — the leakage guarantee itself."""
+    is at least the one-day embargo wide — the leakage guarantee itself."""
     from odbc2parquet_spark.operators.sampling import purged_time_split
 
-    rows = [(i * 1_000_000,) for i in range(10_000)]  # 10k seconds span
+    rows = [(i * 60_000_000,) for i in range(10_000)]  # one a minute, ~7 days
     df = spark.createDataFrame(rows, ["us"])
-    out = {r.split: r for r in purged_time_split(df, "us", embargo_us=500_000_000).collect()}
+    out = {r.split: r for r in purged_time_split(df, "us").collect()}
     assert set(out) == {"train", "purged", "test"}
     assert out["train"].max_us < out["purged"].min_us <= out["purged"].max_us < out["test"].min_us
-    assert out["test"].min_us - out["train"].max_us > 500_000_000
+    assert out["test"].min_us - out["train"].max_us > 86_400_000_000
+    us = [r[0] for r in rows]
+    cutoff = min(us) + ((max(us) - min(us)) * 8) // 10
+    assert out["train"].n_rows == sum(u <= cutoff for u in us)
+    assert out["test"].n_rows == sum(u > cutoff + 86_400_000_000 for u in us)
     total = sum(r.n_rows for r in out.values())
     assert total == 10_000
     # ~80/20 modulo the purged band
@@ -2837,8 +2871,20 @@ def test_lsh_candidate_pairs_multi_equals_per_config_union(spark):
         (r.cfg, r.id_a, r.id_b)
         for r in lsh_candidate_pairs_multi(sig, configs, max_bucket=10).collect()
     }
-    single = set()
+    # brute force: bucket on each band's min-hash tuple, drop buckets of
+    # more than 10 ids, pair what is left
+    sigs = {r.id: [r[f"mh{j}"] for j in range(8)] for r in sig.collect()}
+    want = set()
     for bands, rpb in configs:
-        for r in lsh_candidate_pairs(sig, bands, rpb, max_bucket=10).collect():
-            single.add((f"{bands}x{rpb}", r.id_a, r.id_b))
-    assert multi == single and multi  # equal, and non-trivially non-empty
+        for b in range(bands):
+            buckets = {}
+            for i, mh in sigs.items():
+                buckets.setdefault(tuple(mh[b * rpb:(b + 1) * rpb]), []).append(i)
+            for ids in buckets.values():
+                if len(ids) <= 10:
+                    want |= {(f"{bands}x{rpb}", a, c) for a in ids for c in ids if a < c}
+    assert multi == want and multi  # equal, and non-trivially non-empty
+    single = {
+        ("4x2", r.id_a, r.id_b) for r in lsh_candidate_pairs(sig, max_bucket=10).collect()
+    }
+    assert single == {p for p in multi if p[0] == "4x2"}

@@ -66,7 +66,7 @@ def test_time_text_int_roundtrip_batch(spark):
         time_text_to_int(F.col("txt"), "us").alias("us"),
         time_text_to_int(F.col("txt"), "ms").alias("ms"),
         time_text_to_int(F.col("txt"), "ns").alias("ns"),
-        int_to_time_text(time_text_to_int(F.col("txt"), "us"), "us").alias("back"),
+        int_to_time_text(time_text_to_int(F.col("txt"), "us")).alias("back"),
     ).collect()
     for r in got:
         assert r.us == r.expect_us
@@ -234,7 +234,7 @@ def test_sweep_line_matches_reference_batch(spark):
     df = spark.createDataFrame(iv, ["s", "e"])
     got = sorted(
         (r.t, r.delta, r.concurrency)
-        for r in sweep_line_concurrency(df, "s", "e", num_partitions=8).collect()
+        for r in sweep_line_concurrency(df, "s", "e").collect()
     )
     pts = sorted([(s, 1) for s, _ in iv] + [(e, -1) for _, e in iv])
     run, expect = 0, []
@@ -349,7 +349,7 @@ def test_skyline_matches_reference_batch(spark):
     ):
         pts = [(rng.randrange(nx), rng.randrange(ny)) for _ in range(n)]
         df = spark.createDataFrame(pts, "x int, y int")
-        got = sorted((r.x, r.y) for r in skyline_2d(df, "x", "y", num_partitions=5).collect())
+        got = sorted((r.x, r.y) for r in skyline_2d(df, "x", "y").collect())
         want = sorted(
             (x, y)
             for x, y in pts
@@ -405,7 +405,7 @@ def test_kth_selection_matches_sort_batch(spark):
         s = sorted(vals)
         n = len(vals)
         for k in {1, 2, n // 3, n // 2, n - 1, n}:
-            got = kth_smallest(df, "v", k, bins=64)
+            got = kth_smallest(df, "v", k)
             assert got == s[k - 1], (trial, k)
 
 
@@ -637,8 +637,8 @@ def test_neg_sample_apportionment_bounds(spark):
         n = rng.randint(5, 60)
         rows.append((d, " ".join(rng.choice(vocab) for _ in range(n))))
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = neg_sample_table(docs, table_size=500).collect()
-    assert sum(r["n_draws"] for r in out) == 500
+    out = neg_sample_table(docs).collect()
+    assert sum(r["n_draws"] for r in out) == 1000
     total_micro = None
     # recompute quotas from the emitted micro-weights (w_micro is part of
     # the output contract)
@@ -649,7 +649,7 @@ def test_neg_sample_apportionment_bounds(spark):
     # looser but deterministic check
     total_micro = sum(micros.values())
     for r in out:
-        quota = 500 * r["w_micro"] / total_micro
+        quota = 1000 * r["w_micro"] / total_micro
         assert quota - 1.5 <= r["n_draws"] <= quota + 1.5
 
 

@@ -50,12 +50,16 @@ def test_acf_daily_hand_computed(spark):
     )
     out = {
         r.lag: r
-        for r in acf_daily(ev, "ts", "event_type", max_lag=2).collect()
+        for r in acf_daily(ev, "ts", "event_type").collect()
     }
-    # n=4, T=10: dev=(-6,-2,2,6), den=80, num1=20, num2=-24
+    # n=4, T=10: dev=(-6,-2,2,6), den=80, num1=20, num2=-24, num3=-36;
+    # lags 4..7 reach past the series and have no term
+    assert sorted(out) == list(range(1, 8))
     assert out[1].n_days == 4
     assert out[1].acf6 == pytest.approx(0.25)
     assert out[2].acf6 == pytest.approx(-0.3)
+    assert out[3].acf6 == pytest.approx(-0.45)
+    assert all(out[k].acf6 is None for k in range(4, 8))
 
 
 def test_theil_sen_lower_median(spark):
@@ -183,10 +187,11 @@ def test_pca_power_axis_aligned(spark):
     from odbc2parquet_spark.operators.drift import pca_top_component
 
     # variance only along dim 0: pc1 = e0, lambda = var = 1.0
-    rows = [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [2.0, 0.0])]
+    rows = [(1, [1.0] + [0.0] * 63), (2, [0.0] * 64), (3, [2.0] + [0.0] * 63)]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out = {r.i: r for r in pca_top_component(emb, dim=2).collect()}
-    assert out[0].pc1_milli == 1000 and out[1].pc1_milli == 0
+    out = {r.i: r for r in pca_top_component(emb).collect()}
+    assert out[0].pc1_milli == 1000
+    assert all(out[i].pc1_milli == 0 for i in range(1, 64))
     assert out[0].lambda6 == pytest.approx(1.0)
 
 
@@ -196,11 +201,14 @@ def test_pca_power_general_direction_and_rayleigh(spark):
     # non-axis-aligned: variance concentrated along (1, 1)/sqrt(2); the
     # milli-normalized iterate must land on equal components and the
     # Rayleigh quotient on the dominant eigenvalue of the 2x2 covariance
-    # [[1, 1], [1, 1]] (within the x10^6 truncation of the iterate)
-    rows = [(1, [1.0, 1.0]), (2, [-1.0, -1.0]), (3, [0.0, 0.0])]
+    # [[1, 1], [1, 1]] (within the x10^6 truncation of the iterate); the
+    # other 62 dimensions are constant 0
+    pad = [0.0] * 62
+    rows = [(1, [1.0, 1.0] + pad), (2, [-1.0, -1.0] + pad), (3, [0.0, 0.0] + pad)]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out = {r.i: r for r in pca_top_component(emb, dim=2).collect()}
+    out = {r.i: r for r in pca_top_component(emb).collect()}
     assert out[0].pc1_milli == 1000 and out[1].pc1_milli == 1000
+    assert all(out[i].pc1_milli == 0 for i in range(2, 64))
     assert out[0].lambda6 == pytest.approx(2.0, abs=1e-6)
 
 
@@ -211,10 +219,10 @@ def test_pca_power_zero_covariance_fails_loudly(spark):
     # 0 and pc1 is undefined. The distributed form died with ANSI
     # DIVIDE_BY_ZERO; the driver-side replay must keep the loud failure
     # (never emit a silently arbitrary direction).
-    rows = [(i, [1.5, 2.5]) for i in range(4)]
+    rows = [(i, [1.5, 2.5] * 32) for i in range(4)]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
     with pytest.raises(ZeroDivisionError):
-        pca_top_component(emb, dim=2).collect()
+        pca_top_component(emb).collect()
 
 
 def test_pca_power_unit_scale_and_registry(spark, sf_dir):
@@ -535,7 +543,7 @@ def test_round10_property_batch(spark):
     ).selectExpr("event_id", "CAST(ts AS TIMESTAMP) AS ts", "event_type")
     from odbc2parquet_spark.operators.drift import acf_daily, theil_sen_daily
 
-    for r in acf_daily(ev, "ts", "event_type", max_lag=5).collect():
+    for r in acf_daily(ev, "ts", "event_type").collect():
         assert abs(r.acf6) <= 1.0
     for r in theil_sen_daily(ev, "ts", "event_type").collect():
         # counts in [1,9]: every pairwise slope lies in [-8, 8]
@@ -644,7 +652,7 @@ def test_hw_backtest_prefix_fit_excludes_target(spark):
             [("a", d, x) for d, x in enumerate(xs[: tgt - 1])],
             ["key", "day", "x"],
         )
-        fit = holt_winters_forecast(prefix, horizons=(1,)).collect()[0]
+        fit = holt_winters_forecast(prefix).collect()[0]
         assert r.f1_6 == fit.f1
         assert r.actual == xs[tgt - 1]
         assert r.naive_err6 == round(abs(xs[tgt - 2] - xs[tgt - 1]), 6)
@@ -680,9 +688,14 @@ def test_winnowing_guarantee_and_density(spark):
     assert len(by_doc[1]) < n_grams_1
     pairs = {
         (r.id_a, r.id_b): r.n_shared
-        for r in winnowing_pairs(fp, min_shared=1).collect()
+        for r in winnowing_pairs(fp).collect()
     }
-    assert (1, 2) in pairs and (1, 3) not in pairs
+    want = {
+        (a, b): len(by_doc[a] & by_doc[b])
+        for a in by_doc for b in by_doc
+        if a < b and len(by_doc[a] & by_doc[b]) >= 2
+    }
+    assert pairs == want and (1, 2) in pairs
 
 
 def test_decontaminate_13gram_gate(spark):
@@ -788,22 +801,6 @@ def test_markov_removal_effect_zero_conversion_corpus(spark):
     out = {r.removed: r for r in markov_removal_effect(ev).collect()}
     assert out["none"].p_start_micro == 0
     assert all(r.removal_effect6 is None for r in out.values())
-
-
-def test_pagerank_intermediate_checkpoint_branch(spark):
-    # 9 iterations pass the intermediate truncations (every 4 rounds:
-    # rounds 4 and 8) before the last-round checkpoint; invariants: one
-    # row per node, total rank mass never exceeds the teleport-complete 10^12
-    from odbc2parquet_spark.operators.graph import out_degree_weighted, pagerank_int
-
-    nodes = spark.createDataFrame([(i,) for i in range(6)], ["id"])
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 0), (3, 4)], ["src", "dst"]
-    )
-    out = pagerank_int(nodes, out_degree_weighted(edges), n_nodes=6, iterations=9).collect()
-    assert len(out) == 6
-    assert sum(r["rank"] for r in out) <= 10**12
-    assert all(r["rank"] >= (15 * (10**12 // 6)) // 100 for r in out)
 
 
 def test_fixed_round_fixpoints_sql_executions(spark):

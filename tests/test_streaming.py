@@ -16,14 +16,14 @@ def test_windowed_event_counts_batch_semantics(spark, sf_dir):
     # run the streaming aggregation shape on the batch frame: identical
     # plan semantics, verifiable counts
     ev = load_table(spark, sf_dir, "events")
-    out = windowed_event_counts(ev, window="1 hour")
+    out = windowed_event_counts(ev)
     total = sum(r.n for r in out.collect())
     assert total == ev.count()
 
 
 def test_sessionized_counts(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
-    out = sessionized_counts(ev, gap="30 minutes")
+    out = sessionized_counts(ev)
     rows = out.collect()
     assert sum(r.n_events for r in rows) == ev.count()
     assert all(r.session_end > r.session_start for r in rows)
@@ -130,17 +130,23 @@ def test_late_event_audit_flags_out_of_order(spark):
 
     t0 = dt.datetime(2026, 1, 1)
     s = lambda sec: t0 + dt.timedelta(seconds=sec)  # noqa: E731
-    # arrival order = event_id; delay 60s
+    # arrival order = event_id; delay 600s
     rows = [
-        (1, s(0), "a"),      # watermark undefined -> on time
-        (2, s(1000), "a"),   # advances max to 1000
-        (3, s(990), "a"),    # 990 >= 1000-60 -> on time
-        (4, s(100), "a"),    # 100 < 940 -> LATE
-        (5, s(2000), "b"),   # advances
-        (6, s(1930), "b"),   # 1930 < 1940 -> LATE
-        (7, s(1941), "b"),   # on time
+        (1, s(0), "a"),       # watermark undefined -> on time
+        (2, s(10000), "a"),   # advances max to 10000
+        (3, s(9900), "a"),    # 9900 >= 10000-600 -> on time
+        (4, s(1000), "a"),    # 1000 < 9400 -> LATE
+        (5, s(20000), "b"),   # advances
+        (6, s(19300), "b"),   # 19300 < 19400 -> LATE
+        (7, s(19410), "b"),   # on time
     ]
     df = spark.createDataFrame(rows, ["event_id", "ts", "event_type"])
-    got = {r["event_type"]: r for r in late_event_audit(df, delay_seconds=60).collect()}
-    assert (got["a"]["n_events"], got["a"]["n_late"]) == (4, 1)
-    assert (got["b"]["n_events"], got["b"]["n_late"]) == (3, 1)
+    got = {r["event_type"]: r for r in late_event_audit(df).collect()}
+    # the watermark replayed in arrival order
+    want, seen = {}, None
+    for _, ts, et in rows:
+        n, late = want.get(et, (0, 0))
+        want[et] = (n + 1, late + (seen is not None and ts < seen - dt.timedelta(seconds=600)))
+        seen = ts if seen is None else max(seen, ts)
+    assert {et: (r["n_events"], r["n_late"]) for et, r in got.items()} == want
+    assert want == {"a": (4, 1), "b": (3, 1)}
