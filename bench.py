@@ -130,9 +130,9 @@ def main() -> None:
         # batch=50): the documents table supplies a deterministic
         # high-entropy corpus (md5-hex of each text — the real corpus
         # vocabulary saturates at ~107 possible merges). Runs ONCE per
-        # bench invocation, not per rep: it is itself ~47 sequential
-        # Spark rounds (measured flat at ~0.6s each), so suite-position
-        # effects average out internally.
+        # bench invocation, not per rep. Its <= 5,000 md5 words at sf0.1
+        # are under local_vocab_cutover: one count, one collect and the
+        # driver-local _bpe_local_loop, not a sequence of Spark rounds.
         from odbc2parquet_spark.operators.text import bpe_learn_batched
 
         t0 = time.time()

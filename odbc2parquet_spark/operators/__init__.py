@@ -14,6 +14,7 @@ these are the operations a 100 TB curation pipeline runs on Spark:
                    stubbed — the container has no image/audio libs).
 
 All operators are DataFrame -> DataFrame, no driver-side materialization,
-and every hash function is deterministic (md5-derived) so results are
-reproducible and independently checkable by the DuckDB oracle.
+and every hash function is deterministic: md5-derived, built by the one
+hash module ``functions/hashing.py``, so results are reproducible and
+independently checkable by the DuckDB oracle.
 """

@@ -35,6 +35,28 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _touch_join(
+    c: DataFrame, touches: DataFrame, key: str, channel: F.Column, how: str
+) -> DataFrame:
+    """Conversions ``c`` (keyed ``_k``, timed ``_cts``) joined to the
+    ``channel`` of each touch of the same key in the 7 days up to the
+    conversion: a bounded equi+range join, never a cross join."""
+    t = touches.select(
+        F.col(key).alias("_k"),
+        F.col("ts").alias("_tts"),
+        channel,
+    )
+    return c.join(
+        t,
+        on=[
+            c["_k"] == t["_k"],
+            t["_tts"] <= c["_cts"],
+            t["_tts"] >= c["_cts"] - F.expr("INTERVAL 7 days"),
+        ],
+        how=how,
+    )
+
+
 def linear_attribution(conversions: DataFrame, touches: DataFrame, key: str) -> DataFrame:
     """Credit rows for the linear attribution model.
 
@@ -55,20 +77,7 @@ def linear_attribution(conversions: DataFrame, touches: DataFrame, key: str) -> 
         F.col("ts").alias("_cts"),
         F.col("value"),
     )
-    t = touches.select(
-        F.col(key).alias("_k"),
-        F.col("ts").alias("_tts"),
-        F.col("channel"),
-    )
-    pairs = c.join(
-        t,
-        on=[
-            c["_k"] == t["_k"],
-            t["_tts"] <= c["_cts"],
-            t["_tts"] >= c["_cts"] - F.expr("INTERVAL 7 days"),
-        ],
-        how="inner",
-    )
+    pairs = _touch_join(c, touches, key, F.col("channel"), "inner")
     per = pairs.groupBy("conv_id", "value", "channel").agg(
         F.count(F.lit(1)).alias("n_channel")
     )
@@ -136,20 +145,7 @@ def shapley_attribution(
         F.col("conv_id"),
         F.col("ts").alias("_cts"),
     )
-    t = touches.select(
-        F.col(key).alias("_k"),
-        F.col("ts").alias("_tts"),
-        F.col("channel").alias("_ch"),
-    )
-    pairs = c.join(
-        t,
-        on=[
-            c["_k"] == t["_k"],
-            t["_tts"] <= c["_cts"],
-            t["_tts"] >= c["_cts"] - F.expr("INTERVAL 7 days"),
-        ],
-        how="left",
-    )
+    pairs = _touch_join(c, touches, key, F.col("channel").alias("_ch"), "left")
     masks = pairs.groupBy("conv_id").agg(
         F.coalesce(
             F.expr(f"bit_or(shiftleft(1, {idx_expr}))"), F.lit(0)

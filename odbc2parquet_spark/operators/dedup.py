@@ -21,12 +21,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from odbc2parquet_spark.functions.hashing import md5_long, md5_pair
 from odbc2parquet_spark.operators.similarity import (
     band_melt,
     banded_hamming_pairs,
     cap_buckets,
     capped_bucket_pairs,
 )
+from odbc2parquet_spark.operators.text import words
 
 # ---------------------------------------------------------------- exact
 
@@ -116,9 +118,7 @@ def minhash_signatures(shingles: DataFrame) -> DataFrame:
     engines reproduce it, and everything fits a positive int64
     (max h1 + 7*h2 < 2^63).
     """
-    hexd = F.md5(F.col("g"))
-    h1 = F.conv(F.substring(hexd, 1, 15), 16, 10).cast("long")
-    h2 = F.conv(F.substring(hexd, 16, 15), 16, 10).cast("long")
+    h1, h2 = md5_pair(F.col("g"))
     aggs = [
         F.min((h1 + F.lit(j) * h2) % F.lit(MINHASH_MOD)).alias(f"mh{j}")
         for j in range(8)
@@ -200,6 +200,22 @@ def lsh_candidate_pairs_multi(
     )
 
 
+def shingle_overlap(cand: DataFrame, sh: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(common, sizes): the exact side of MinHash verification. ``common``
+    is (id_a, id_b, common), the distinct shingles each candidate pair
+    shares; ``sizes`` is (id, n), each document's distinct-shingle count."""
+    sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
+    a = sh.select(F.col("id").alias("id_a"), "g")
+    b = sh.select(F.col("id").alias("id_b"), "g")
+    common = (
+        cand.join(a, "id_a")
+        .join(b, ["id_b", "g"])
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("common"))
+    )
+    return common, sizes
+
+
 def minhash_near_duplicates(docs: DataFrame) -> DataFrame:
     """Full near-dup pipeline: shingle -> sign -> band -> candidates ->
     exact-Jaccard verify (verification joins shingles only for candidate
@@ -227,16 +243,7 @@ def minhash_near_duplicates(docs: DataFrame) -> DataFrame:
     sig = minhash_signatures(
         word_shingle_stream(docs, spread=True),
     )
-    cand = lsh_candidate_pairs(sig)
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
-    a = sh.select(F.col("id").alias("id_a"), "g")
-    b = sh.select(F.col("id").alias("id_b"), "g")
-    common = (
-        cand.join(a, "id_a")
-        .join(b, ["id_b", "g"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("common"))
-    )
+    common, sizes = shingle_overlap(lsh_candidate_pairs(sig), sh)
     return (
         common.join(sizes.select(F.col("id").alias("id_a"), F.col("n").alias("n_a")), "id_a")
         .join(sizes.select(F.col("id").alias("id_b"), F.col("n").alias("n_b")), "id_b")
@@ -508,8 +515,7 @@ def simhash_weighted(docs: DataFrame) -> DataFrame:
     its multiplicity for free. (The previous explode + 32-aggregate
     groupBy shuffled every token row for the same integers.)
     """
-    ws = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
-    hs = F.transform(ws, lambda w: F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("long"))
+    hs = F.transform(words(F.col("text")), lambda w: md5_long(w, 8))
     prepared = docs.select(F.col("doc_id").alias("id"), hs.alias("hs"))
     masks = F.array(*[F.lit(1 << i) for i in range(32)])
     counts = F.aggregate(
@@ -533,10 +539,9 @@ BLOOM_M = 4096   #: filter bits
 BLOOM_K = 3      #: hash functions (two-hash family, same as MinHash)
 
 
-def _bloom_positions(content_hash: F.Column) -> F.Column:
-    """k bit positions for a content md5: (h1 + j*h2) mod m, j < k."""
-    h1 = F.conv(F.substring(content_hash, 1, 15), 16, 10).cast("long")
-    h2 = F.conv(F.substring(content_hash, 16, 15), 16, 10).cast("long")
+def _bloom_positions(text: F.Column) -> F.Column:
+    """k bit positions for the md5 of ``text``: (h1 + j*h2) mod m, j < k."""
+    h1, h2 = md5_pair(text)
     return F.array(
         *[((h1 + F.lit(j) * h2) % BLOOM_M).cast("long") for j in range(BLOOM_K)]
     )
@@ -555,7 +560,7 @@ def bloom_build(docs: DataFrame) -> DataFrame:
     false positives possible, false negatives impossible).
     """
     pos = docs.select(
-        F.explode(_bloom_positions(F.md5(F.col("text")))).alias("p")
+        F.explode(_bloom_positions(F.col("text"))).alias("p")
     )
     return (
         pos.select(
@@ -578,7 +583,7 @@ def bloom_probe(batch: DataFrame, bloom: DataFrame) -> DataFrame:
     """
     pos = batch.select(
         F.col("doc_id"),
-        F.explode(_bloom_positions(F.md5(F.col("text")))).alias("p"),
+        F.explode(_bloom_positions(F.col("text"))).alias("p"),
     ).select(
         "doc_id",
         (F.col("p") / 32).cast("long").alias("word"),
@@ -768,7 +773,7 @@ def prefix_jaccard_pairs(
             f"threshold {threshold!r} is not a short decimal (denominator "
             f"{q} > 1000); pass a value with at most 3 decimal places"
         )
-    gh = F.conv(F.substring(F.md5(F.col("g")), 1, 15), 16, 10).cast("long")
+    gh = md5_long(F.col("g"))
     # The hashed (id, gh) stream is referenced by the df count, both
     # sides of the prefix self-join and the verification sets — six
     # evaluations of the input subtree. Persisting this narrow proxy was
@@ -865,7 +870,7 @@ def winnowing_fingerprints(docs: DataFrame) -> DataFrame:
             )
         ).alias("pos", "g"),
     )
-    h = F.conv(F.substring(F.md5(F.col("g")), 1, 12), 16, 10).cast("long")
+    h = md5_long(F.col("g"), 12)
     # Long documents are winnowed in independent 1024-gram BLOCKS: the
     # packed argmin reserves 10 bits for the position tiebreak, so the
     # tiebreak encodes the block-LOCAL position and the window partitions
@@ -954,17 +959,9 @@ def suffix_lcp_spans(docs: DataFrame) -> DataFrame:
     hashed spec produces identical results to the token spec except at
     md5 collisions (~2^-60 per token pair — the approximation bound).
     """
-    tok_hash = (
-        "transform(list, w -> CAST(conv(substring(md5(w), 1, 15), 16, 10) "
-        "AS BIGINT))"
-    )
     ws = docs.select(
         F.col("doc_id"),
-        F.expr(
-            tok_hash.replace(
-                "list", "filter(split(text, ' '), x -> x != '')"
-            )
-        ).alias("ws"),
+        F.transform(words(F.col("text")), lambda w: md5_long(w)).alias("ws"),
     )
     # NB: Spark's sequence(1, 0) yields DESCENDING [1, 0], not empty —
     # sub-2-token documents must short-circuit to an empty suffix set

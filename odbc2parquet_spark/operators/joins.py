@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from odbc2parquet_spark.functions.hashing import md5_pair
 from odbc2parquet_spark.operators.similarity import cap_buckets
 
 
@@ -221,14 +222,12 @@ def bloom_semi_join(
     Hash family: md5 two-hash (h1 + j*h2) mod 4096 — the oracle-reproducible
     family every sketch in this repo uses.
     """
-    def positions(key_col: F.Column) -> F.Column:
-        hexd = F.md5(key_col.cast("string"))
-        h1 = F.conv(F.substring(hexd, 1, 15), 16, 10).cast("long")
-        h2 = F.conv(F.substring(hexd, 16, 15), 16, 10).cast("long")
-        return F.array(*[((h1 + F.lit(j) * h2) % 4096) for j in range(3)])
+    def positions(key_col: F.Column) -> list[F.Column]:
+        h1, h2 = md5_pair(key_col.cast("string"))
+        return [(h1 + F.lit(j) * h2) % 4096 for j in range(3)]
 
     bloom = (
-        small.select(F.explode(positions(F.col(small_key))).alias("p"))
+        small.select(F.explode(F.array(*positions(F.col(small_key)))).alias("p"))
         .select(
             (F.col("p") / 32).cast("long").alias("word"),
             F.expr("shiftleft(1L, cast(p % 32 as int))").alias("b"),
@@ -240,13 +239,9 @@ def bloom_semi_join(
     # and NO re-group: the first version exploded 3x rows and regrouped on
     # every big-side column (a wide-row shuffle that cost more than the
     # join it was saving); this shape adds zero exchanges to the big side
-    hexd = F.md5(F.col(big_key).cast("string"))
-    h1 = F.conv(F.substring(hexd, 1, 15), 16, 10).cast("long")
-    h2 = F.conv(F.substring(hexd, 16, 15), 16, 10).cast("long")
     probe = big
     conds = []
-    for j in range(3):
-        pos = (h1 + F.lit(j) * h2) % 4096
+    for j, pos in enumerate(positions(F.col(big_key))):
         bj = bloom.withColumnsRenamed({"word": f"_w{j}", "bits": f"_bits{j}"})
         probe = probe.withColumn(f"_p{j}", pos).join(
             F.broadcast(bj),

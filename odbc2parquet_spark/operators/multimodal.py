@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from odbc2parquet_spark.functions.hashing import hex_long
 from odbc2parquet_spark.operators.similarity import banded_hamming_pairs
 
 #: what a decoder raises for a payload it cannot decode
@@ -954,7 +955,7 @@ def _digest_jumps(binary_df: DataFrame) -> tuple[DataFrame, Window]:
     idx = video_frame_index(binary_df, every_k=1).filter(
         F.col("sample_idx").isNotNull()
     )
-    sig = F.conv(F.substring("digest", 1, 15), 16, 10).cast("long")
+    sig = hex_long("digest")
     w = Window.partitionBy("doc_id").orderBy("sample_idx")
     jumps = idx.withColumn("sig", sig).withColumn(
         "dist", F.bit_count(F.col("sig").bitwiseXOR(F.lag("sig").over(w)))

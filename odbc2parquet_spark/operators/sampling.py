@@ -17,11 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_HASH_DOMAIN = 1 << 60
-
-
-def _hash60(col: F.Column) -> F.Column:
-    return F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10).cast("long")
+from odbc2parquet_spark.functions.hashing import HASH_DOMAIN, md5_long
 
 
 def stratified_sample(
@@ -30,10 +26,10 @@ def stratified_sample(
     """Per-stratum hash sampling (e.g. downsample overrepresented
     languages). Strata absent from ``fractions`` are dropped; the
     threshold is a when-chain, so still a narrow filter with no join."""
-    h = _hash60(F.col(key_col))
+    h = md5_long(F.col(key_col).cast("string"))
     thr = None
     for value, frac in fractions.items():
-        cond = F.lit(int(frac * _HASH_DOMAIN))
+        cond = F.lit(int(frac * HASH_DOMAIN))
         thr = (
             F.when(F.col(strata_col) == value, cond)
             if thr is None
@@ -64,12 +60,12 @@ def _rate_sample(
             "_thr_",
             (
                 F.floor(weight * F.col("_t_") / F.col("_n_") * F.lit(float(_QUANT)))
-                * F.lit(_HASH_DOMAIN // _QUANT)
+                * F.lit(HASH_DOMAIN // _QUANT)
             ).cast("long"),
         )
         .select("_src_", "_thr_")
     )
-    h = _hash60(F.col(key_col))
+    h = md5_long(F.col(key_col).cast("string"))
     return (
         df.join(F.broadcast(thresholds), df[source_col] == F.col("_src_"))
         .filter(h < F.col("_thr_"))
@@ -139,11 +135,11 @@ def pps_sample(
     from pyspark.sql import Window
 
     spark = df.sparkSession
-    width = -(-_HASH_DOMAIN // 32)  # ceil: pid < 32
+    width = -(-HASH_DOMAIN // 32)  # ceil: pid < 32
     keyed = df.select(
         F.col("doc_id"),
         F.col(weight_col).cast("long").alias("w"),
-        _hash60(F.col("doc_id")).alias("_h_"),
+        md5_long(F.col("doc_id").cast("string")).alias("_h_"),
     )
     with_pid = keyed.withColumn(
         "_pid_", F.expr(f"cast(_h_ div {width} as int)")
@@ -215,7 +211,7 @@ def ab_assign(df: DataFrame, key_col: str) -> DataFrame:
     unit's events in one arm, the correctness condition for any
     per-unit experiment metric.
     """
-    slot = _hash60(F.concat(F.lit("exp:"), F.col(key_col).cast("string"))) % 2
+    slot = md5_long(F.concat(F.lit("exp:"), F.col(key_col).cast("string"))) % 2
     return df.withColumn("variant", F.when(slot == 0, "A").when(slot == 1, "B"))
 
 
@@ -253,7 +249,8 @@ def reservoir_sample(
     """
     from pyspark.sql import Window
 
-    u = (_hash60(F.col(key_col)) + 1).cast("double") / F.lit(float(_HASH_DOMAIN))
+    h = md5_long(F.col(key_col).cast("string"))
+    u = (h + 1).cast("double") / F.lit(float(HASH_DOMAIN))
     score = F.round(F.log(u), 9) / F.col(weight_col).cast("double")
     w = Window.partitionBy(*group_cols).orderBy(F.desc("_score_"), F.col(key_col))
     return (
@@ -320,7 +317,7 @@ def kfold_assign(df: DataFrame, key_col: str, strata_col: str | None = None) -> 
     evidence the balance claim rests on; apply the same fold expression
     upstream to materialize row-level assignments.
     """
-    fold = (_hash60(F.col(key_col)) % 5).alias("fold")
+    fold = (md5_long(F.col(key_col).cast("string")) % 5).alias("fold")
     cols = ([F.col(strata_col)] if strata_col else []) + [fold]
     names = ([strata_col] if strata_col else []) + ["fold"]
     return df.select(*cols).groupBy(*names).agg(F.count("*").alias("n_rows"))

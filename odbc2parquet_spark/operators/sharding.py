@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from odbc2parquet_spark.functions.hashing import hex_long
+
 
 def pack_shards(docs_with_tokens: DataFrame, budget: int) -> DataFrame:
     """(doc_id, n_tokens, shard): global-window reference implementation."""
@@ -103,7 +105,7 @@ def epoch_shuffle(docs: DataFrame) -> DataFrame:
         F.md5(F.concat_ws(":", F.col("epoch"), F.col("doc_id"))).alias("_key_"),
     )
     shard = (
-        F.conv(F.substring("_key_", 1, 8), 16, 10).cast("long") % 8
+        hex_long("_key_", 1, 8) % 8
     ).alias("shard")
     keyed = keyed.select("epoch", "doc_id", "_key_", shard)
     w = Window.partitionBy("epoch", "shard").orderBy("_key_")

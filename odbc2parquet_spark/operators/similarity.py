@@ -19,6 +19,7 @@ Scale notes:
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
@@ -799,6 +800,37 @@ def _collect_codebook(codebook: DataFrame, m: int, sub: int):
     return cb_cids, cb_mats
 
 
+def _pq_kernel(codebook: DataFrame, m: int, arrays) -> tuple[list, Callable]:
+    """(per-subspace centroid ids, ``d2``): the Arrow kernel that
+    :func:`pq_assign` and :func:`_pq_probe_lut` share. ``d2`` maps
+    (id, vector) record batches to (ids, per-subspace matrices of the
+    squared distance of every row to every centroid) for each non-empty
+    batch, one matrix at a time.
+
+    ``arrays`` is a precollected :func:`_collect_codebook` result, so
+    composers that feed the SAME codebook to both kernels (adc/ivf-pq
+    search) evaluate its groupBy DAG once, not twice — the codebook build
+    is the dominant fixed cost per search."""
+    import numpy as np
+
+    sub = _pq_split(m)
+    cb_cids, cb_mats = arrays or _collect_codebook(codebook, m, sub)
+
+    def d2(batches):
+        for b in batches:
+            n = b.num_rows
+            if n == 0:
+                continue
+            flat = _dense_values(b.column(1), n, m * sub)
+            Vs = flat.astype(np.float64).reshape(n, m, sub)
+            yield b.column(0).to_numpy(zero_copy_only=False), (
+                np.square(Vs[:, s, None, :] - cb_mats[s][None, :, :]).sum(axis=-1)
+                for s in range(m)
+            )
+
+    return cb_cids, d2
+
+
 def pq_assign(
     vectors: DataFrame,
     codebook: DataFrame,
@@ -835,27 +867,15 @@ def pq_assign(
     import numpy as np
     import pyarrow as pa
 
-    sub = _pq_split(m)
-    # ``arrays``: a precollected _collect_codebook result, so composers
-    # that feed the SAME codebook to both the assignment and probe-LUT
-    # kernels (adc/ivf-pq search) evaluate its groupBy DAG once, not
-    # twice — the codebook build is the dominant fixed cost per search.
-    cb_cids, cb_mats = arrays or _collect_codebook(codebook, m, sub)
+    cb_cids, d2 = _pq_kernel(codebook, m, arrays)
     subspaces = np.arange(m, dtype=np.int32)
 
     def assign_batches(batches):
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            ids = b.column(0).to_numpy(zero_copy_only=False)
-            flat = _dense_values(b.column(1), n, m * sub)
-            Vs = flat.astype(np.float64).reshape(n, m, sub)
+        for ids, ds in d2(batches):
+            n = len(ids)
             codes = np.empty((n, m), dtype=np.int64)
             d2min = np.empty((n, m), dtype=np.float64)
-            for s in range(m):
-                diff = Vs[:, s, None, :] - cb_mats[s][None, :, :]
-                d = np.square(diff).sum(axis=-1)
+            for s, d in enumerate(ds):
                 j = np.argmin(d, axis=1)  # ties -> first = lowest cid
                 codes[:, s] = cb_cids[s][j]
                 d2min[:, s] = d[np.arange(n), j]
@@ -898,20 +918,13 @@ def _pq_probe_lut(
     import numpy as np
     import pyarrow as pa
 
-    sub = _pq_split(m)
-    cb_cids, cb_mats = arrays or _collect_codebook(codebook, m, sub)
+    cb_cids, d2 = _pq_kernel(codebook, m, arrays)
 
     def lut_batches(batches):
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            ids = b.column(0).to_numpy(zero_copy_only=False)
-            flat = _dense_values(b.column(1), n, m * sub)
-            Vs = flat.astype(np.float64).reshape(n, m, sub)
+        for ids, ds in d2(batches):
+            n = len(ids)
             out_q, out_s, out_c, out_d = [], [], [], []
-            for s in range(m):
-                d = np.square(Vs[:, s, None, :] - cb_mats[s][None, :, :]).sum(axis=-1)
+            for s, d in enumerate(ds):
                 k_s = d.shape[1]
                 out_q.append(np.repeat(ids, k_s))
                 out_s.append(np.full(n * k_s, s, dtype=np.int32))
@@ -992,9 +1005,7 @@ def pq_adc_topk(
         if codebook is not None
         else pq_codebook(vectors, m=m, k=k_centroids)
     )
-    cba = _collect_codebook(cb, m, _pq_split(m))
-    codes = pq_assign(vectors, cb, m=m, arrays=cba).select("vec_id", "subspace", "code")
-    lut = _pq_probe_lut(probes, cb, m, "vec_id", "embedding", arrays=cba)
+    codes, lut = _pq_codes_lut(vectors, probes, cb, m)
     scored = (
         codes.join(F.broadcast(lut), ["subspace", "code"])
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -1002,6 +1013,28 @@ def pq_adc_topk(
         .agg(F.sum("pd2").alias("adc_dec"))
     )
     return _adc_rank(scored)
+
+
+def _pq_codes_lut(
+    vectors: DataFrame, probes: DataFrame, cb: DataFrame, m: int
+) -> tuple[DataFrame, DataFrame]:
+    """(codes, lut): the PQ codes of ``vectors`` and the ADC lookup table
+    of ``probes`` under codebook ``cb``, which is collected once for both."""
+    cba = _collect_codebook(cb, m, _pq_split(m))
+    codes = pq_assign(vectors, cb, m=m, arrays=cba).select("vec_id", "subspace", "code")
+    return codes, _pq_probe_lut(probes, cb, m, "vec_id", "embedding", arrays=cba)
+
+
+def _ivf_pq_index(
+    vectors: DataFrame, probes: DataFrame, k_cells: int, m: int, k_centroids: int
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """(cents, cell, codes, lut): the IVF-PQ index over ``vectors`` —
+    seeded centroids, each vector's cell (vec_id, centroid_id), its PQ
+    codes — and the ADC lookup table of ``probes``."""
+    cents = ivf_seed_centroids(vectors, k_cells)
+    cell = ivf_assign(vectors, cents).select("vec_id", "centroid_id")
+    codes, lut = _pq_codes_lut(vectors, probes, pq_codebook(vectors, m=m, k=k_centroids), m)
+    return cents, cell, codes, lut
 
 
 def ivf_pq_search(
@@ -1030,13 +1063,8 @@ def ivf_pq_search(
     the per-query top-k window. DECIMAL(20,4) partial sums keep results
     engine-exact.
     """
-    cents = ivf_seed_centroids(vectors, k_cells)
-    cell = ivf_assign(vectors, cents).select("vec_id", "centroid_id")
-    cb = pq_codebook(vectors, m=m, k=k_centroids)
-    cba = _collect_codebook(cb, m, _pq_split(m))
-    codes = pq_assign(vectors, cb, m=m, arrays=cba).select("vec_id", "subspace", "code")
+    cents, cell, codes, lut = _ivf_pq_index(vectors, probes, k_cells, m, k_centroids)
     qprobe = ivf_probe_cells(probes, cents, nprobe).select("query_id", "centroid_id")
-    lut = _pq_probe_lut(probes, cb, m, "vec_id", "embedding", arrays=cba)
     cand = (
         cell.join(F.broadcast(qprobe), "centroid_id")
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -1484,15 +1512,10 @@ def ivf_pq_nprobe_curve(
     result contract of :func:`ivf_pq_search` with the operating point
     attached.
     """
-    cents = ivf_seed_centroids(vectors, k_cells)
-    cell = ivf_assign(vectors, cents).select("vec_id", "centroid_id")
-    cb = pq_codebook(vectors, m=m, k=k_centroids)
-    cba = _collect_codebook(cb, m, _pq_split(m))
-    codes = pq_assign(vectors, cb, m=m, arrays=cba).select("vec_id", "subspace", "code")
+    cents, cell, codes, lut = _ivf_pq_index(vectors, probes, k_cells, m, k_centroids)
     qprobe = ivf_probe_cells(probes, cents, 8).select(
         "query_id", "centroid_id", F.col("rank").alias("prank")
     )
-    lut = _pq_probe_lut(probes, cb, m, "vec_id", "embedding", arrays=cba)
     cand = (
         cell.join(F.broadcast(qprobe), "centroid_id")
         .filter(F.col("vec_id") != F.col("query_id"))

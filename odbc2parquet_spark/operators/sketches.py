@@ -22,11 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-KMV_M = float(1 << 60)  # hash domain: md5's first 15 hex digits
-
-
-def _hash60(col: F.Column) -> F.Column:
-    return F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10).cast("long")
+from odbc2parquet_spark.functions.hashing import HASH_DOMAIN, md5_long, md5_pair
 
 
 def kmv_distinct_estimate(df: DataFrame, col: str) -> DataFrame:
@@ -35,7 +31,7 @@ def kmv_distinct_estimate(df: DataFrame, col: str) -> DataFrame:
     ``estimate`` is (k-1) * M / h_k with k = 256 when at least k distinct hashes exist,
     else the exact distinct count (small-cardinality regime).
     """
-    hashes = df.select(_hash60(F.col(col)).alias("h")).distinct()
+    hashes = df.select(md5_long(F.col(col).cast("string")).alias("h")).distinct()
     smallest = hashes.orderBy("h").limit(256)
     return smallest.agg(
         F.count("*").alias("k_used"),
@@ -43,7 +39,7 @@ def kmv_distinct_estimate(df: DataFrame, col: str) -> DataFrame:
         F.when(
             F.count("*") < 256, F.count("*").cast("double")
         )
-        .otherwise((F.lit(255.0) * F.lit(KMV_M)) / F.max("h"))
+        .otherwise((F.lit(255.0) * F.lit(float(HASH_DOMAIN))) / F.max("h"))
         .alias("estimate"),
     )
 
@@ -59,6 +55,20 @@ def heavy_hitters(df: DataFrame, col: str, top_n: int = 10) -> DataFrame:
     )
 
 
+def _cms_cells(value: F.Column) -> F.Column:
+    """The 4 (row, col) counter cells of ``value``: col_j = (h1 + j*h2) mod 256."""
+    h1, h2 = md5_pair(value.cast("string"))
+    return F.array(
+        *[
+            F.struct(
+                F.lit(j).alias("row"),
+                ((h1 + F.lit(j) * h2) % F.lit(256)).cast("long").alias("col"),
+            )
+            for j in range(4)
+        ]
+    )
+
+
 def count_min_sketch(df: DataFrame, col: str) -> DataFrame:
     """(row, col, n): a count-min sketch of the value stream — the
     fixed-size frequency summary that answers "roughly how often does X
@@ -70,19 +80,8 @@ def count_min_sketch(df: DataFrame, col: str) -> DataFrame:
     explode to 4 narrow rows + one groupBy on (row, col) with map-side
     partials; the sketch is 4*256 rows regardless of stream size.
     """
-    h1 = F.conv(F.substring(F.md5(F.col(col).cast("string")), 1, 15), 16, 10).cast("long")
-    h2 = F.conv(F.substring(F.md5(F.col(col).cast("string")), 16, 15), 16, 10).cast("long")
-    cells = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("row"),
-                ((h1 + F.lit(j) * h2) % F.lit(256)).cast("long").alias("col"),
-            )
-            for j in range(4)
-        ]
-    )
     return (
-        df.select(F.explode(cells).alias("c"))
+        df.select(F.explode(_cms_cells(F.col(col))).alias("c"))
         .select(F.col("c.row").alias("row"), F.col("c.col").alias("col"))
         .groupBy("row", "col")
         .agg(F.count("*").alias("n"))
@@ -93,20 +92,9 @@ def cms_estimate(sketch: DataFrame, probes: DataFrame) -> DataFrame:
     """(value, est): point-frequency estimates — min over the sketch rows
     of each probe's ``value`` counter. The sketch (4*256 rows) broadcasts;
     estimates never over-count below the classic eps*N bound."""
-    h1 = F.conv(F.substring(F.md5(F.col("value").cast("string")), 1, 15), 16, 10).cast("long")
-    h2 = F.conv(F.substring(F.md5(F.col("value").cast("string")), 16, 15), 16, 10).cast("long")
-    cells = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("row"),
-                ((h1 + F.lit(j) * h2) % F.lit(256)).cast("long").alias("col"),
-            )
-            for j in range(4)
-        ]
-    )
-    melted = probes.select(F.col("value"), F.explode(cells).alias("c")).select(
-        "value", F.col("c.row").alias("row"), F.col("c.col").alias("col")
-    )
+    melted = probes.select(
+        F.col("value"), F.explode(_cms_cells(F.col("value"))).alias("c")
+    ).select("value", F.col("c.row").alias("row"), F.col("c.col").alias("col"))
     return (
         melted.join(F.broadcast(sketch), ["row", "col"], "left")
         .groupBy("value")
@@ -126,14 +114,14 @@ def kmv_distinct_per_group(df: DataFrame, group_cols: list[str], col: str) -> Da
     group ships at most 64 longs to the estimate. Deterministic (md5-
     derived hashes), so two engines agree on the ESTIMATE itself.
     """
-    hashes = df.select(*group_cols, _hash60(F.col(col)).alias("h")).distinct()
+    hashes = df.select(*group_cols, md5_long(F.col(col).cast("string")).alias("h")).distinct()
     w = Window.partitionBy(*group_cols).orderBy("h")
     smallest = hashes.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 64)
     return smallest.groupBy(*group_cols).agg(
         F.count("*").alias("k_used"),
         F.max("h").alias("kth_hash"),
         F.when(F.count("*") < 64, F.count("*").cast("double"))
-        .otherwise((F.lit(63.0) * F.lit(KMV_M)) / F.max("h"))
+        .otherwise((F.lit(63.0) * F.lit(float(HASH_DOMAIN))) / F.max("h"))
         .alias("estimate"),
     )
 
@@ -220,7 +208,7 @@ def hll_registers(df: DataFrame, group_cols: list[str], col: str) -> DataFrame:
     (MAX associativity)."""
     m = 256
     suffix_bits = 52
-    h = _hash60(F.col(col))
+    h = md5_long(F.col(col).cast("string"))
     idx = h.bitwiseAND(F.lit(m - 1))
     rest = F.shiftright(h, 8)
     rho = (
@@ -287,10 +275,10 @@ def kmv_overlap_estimate(df_a: DataFrame, col_a: str, df_b: DataFrame, col_b: st
     retained (which HLL cannot answer).
     """
     ha = (
-        df_a.select(_hash60(F.col(col_a)).alias("h")).distinct().orderBy("h").limit(256)
+        df_a.select(md5_long(F.col(col_a).cast("string")).alias("h")).distinct().orderBy("h").limit(256)
     )
     hb = (
-        df_b.select(_hash60(F.col(col_b)).alias("h")).distinct().orderBy("h").limit(256)
+        df_b.select(md5_long(F.col(col_b).cast("string")).alias("h")).distinct().orderBy("h").limit(256)
     )
     union_k = ha.unionAll(hb).distinct().orderBy("h").limit(256)
     both = ha.intersect(hb)  # hashes in K_a ∩ K_b
@@ -301,7 +289,7 @@ def kmv_overlap_estimate(df_a: DataFrame, col_a: str, df_b: DataFrame, col_b: st
     jacc = F.col("n_shared") / F.col("k_used")
     union_est = F.when(
         F.col("k_used") < 256, F.col("k_used").cast("double")
-    ).otherwise((F.lit(255.0) * F.lit(KMV_M)) / F.col("hk"))
+    ).otherwise((F.lit(255.0) * F.lit(float(HASH_DOMAIN))) / F.col("hk"))
     return stats.select(
         "k_used",
         "n_shared",

@@ -14,6 +14,7 @@ import heapq
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from odbc2parquet_spark.functions.hashing import md5_long
 from odbc2parquet_spark.operators.bucketing import release_local_checkpoint
 
 #: regex token pattern shared with the oracle: words | numbers | one symbol.
@@ -183,11 +184,10 @@ def fingerprints(docs: DataFrame) -> DataFrame:
     reproducible in any engine with md5. Left fold via F.aggregate.
     """
     ws = words(F.col("text"))
-    word_h = lambda w: F.conv(F.substring(F.md5(w), 1, 6), 16, 10).cast("long")  # noqa: E731
     fp = F.aggregate(
         ws,
         F.lit(0).cast("long"),
-        lambda acc, w: (acc * F.lit(31) + word_h(w)) % F.lit(1_000_000_007),
+        lambda acc, w: (acc * F.lit(31) + md5_long(w, 6)) % F.lit(1_000_000_007),
     )
     return docs.select("doc_id", fp.alias("fingerprint"), F.size(ws).cast("long").alias("n_words"))
 
@@ -704,6 +704,23 @@ def _bpe_local_loop(
     return merges
 
 
+def _bpe_apply(syms: list[str], merges: list[tuple[str, str]]) -> list[str]:
+    """``syms`` after each merge (a, b) in order, each one joining every
+    adjacent a, b left to right without overlap: the per-symbol merge that
+    learning and encoding share."""
+    for a, b in merges:
+        ab, i, res = a + b, 0, []
+        while i < len(syms):
+            if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
+                res.append(ab)
+                i += 2
+            else:
+                res.append(syms[i])
+                i += 1
+        syms = res
+    return syms
+
+
 def _bpe_local_loop_ref(
     table: list[tuple[int, list[str]]], n_merges: int, batch: int
 ) -> list[tuple[str, str]]:
@@ -731,18 +748,7 @@ def _bpe_local_loop_ref(
         if not selected:
             break
         merges.extend(selected)
-        for a, b in selected:
-            ab = a + b
-            for si, syms in enumerate(seqs):
-                i, res = 0, []
-                while i < len(syms):
-                    if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                        res.append(ab)
-                        i += 2
-                    else:
-                        res.append(syms[i])
-                        i += 1
-                seqs[si] = res
+        seqs = [_bpe_apply(syms, selected) for syms in seqs]
     return merges
 
 
@@ -851,34 +857,16 @@ def bpe_learn_batched(
             for pdf in batches:
                 seqs = pdf["s"]
                 if any("\x00" in t for s in seqs for t in s):
-                    out = []
-                    for s in seqs:
-                        syms = list(s)
-                        for a, b in _m:
-                            ab, i, res = a + b, 0, []
-                            while i < len(syms):
-                                if (
-                                    i + 1 < len(syms)
-                                    and syms[i] == a
-                                    and syms[i + 1] == b
-                                ):
-                                    res.append(ab)
-                                    i += 2
-                                else:
-                                    res.append(syms[i])
-                                    i += 1
-                            syms = res
-                        out.append(syms)
-                    yield pd.DataFrame({"wc": pdf["wc"], "s": out})
-                    continue
-                joined = pd.Series(
-                    ["\x00" + "\x00\x00".join(s) + "\x00" for s in seqs]
-                )
-                for a, b in _m:
-                    joined = joined.str.replace(
-                        f"\x00{a}\x00\x00{b}\x00", f"\x00{a}{b}\x00", regex=False
+                    out = [_bpe_apply(list(s), _m) for s in seqs]
+                else:
+                    joined = pd.Series(
+                        ["\x00" + "\x00\x00".join(s) + "\x00" for s in seqs]
                     )
-                out = [s[1:-1].split("\x00\x00") for s in joined]
+                    for a, b in _m:
+                        joined = joined.str.replace(
+                            f"\x00{a}\x00\x00{b}\x00", f"\x00{a}{b}\x00", regex=False
+                        )
+                    out = [s[1:-1].split("\x00\x00") for s in joined]
                 yield pd.DataFrame({"wc": pdf["wc"], "s": out})
 
         prev = sym
@@ -898,7 +886,7 @@ def hash_embed_vectors(docs: DataFrame) -> DataFrame:
     makes downstream dot products engine-exact). See :func:`hash_embed`
     for the scalar-certificate form and the scale notes.
     """
-    h1 = F.conv(F.substring(F.md5(F.col("w")), 1, 15), 16, 10).cast("long")
+    h1 = md5_long(F.col("w"))
     toks = docs.select(
         F.col("doc_id"), F.explode(words(F.col("text"))).alias("w")
     ).select(
@@ -998,20 +986,7 @@ def bpe_vocab_token_counts(docs: DataFrame, merges: list[tuple[str, str]]) -> Da
 
     def enc(batches):
         for pdf in batches:
-            counts = []
-            for w in pdf["word"]:
-                syms = list(w)
-                for a, b in mlist:
-                    ab, i, res = a + b, 0, []
-                    while i < len(syms):
-                        if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                            res.append(ab)
-                            i += 2
-                        else:
-                            res.append(syms[i])
-                            i += 1
-                    syms = res
-                counts.append(len(syms))
+            counts = [len(_bpe_apply(list(w), mlist)) for w in pdf["word"]]
             yield pd.DataFrame({"word": pdf["word"], "n_tok": counts})
 
     return words_df.mapInPandas(enc, "word string, n_tok long")
@@ -1036,7 +1011,7 @@ def novelty_scores(docs: DataFrame) -> DataFrame:
     from pyspark.sql import Window
 
     prepared = docs.select("doc_id", words(F.col("text")).alias("ws"))
-    gh = F.conv(F.substring(F.md5(F.col("g")), 1, 15), 16, 10).cast("long")
+    gh = md5_long(F.col("g"))
     grams = (
         prepared.select(
             "doc_id",

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from odbc2parquet_spark import cachereg
 from odbc2parquet_spark.catalog import load_table, spread_scan
+from odbc2parquet_spark.functions.hashing import md5_long
 from odbc2parquet_spark.operators import dedup as D
 from odbc2parquet_spark.queries import query
 
@@ -66,6 +67,18 @@ _MINHASH_CAND_CTE = (
 
 # shingles -> signatures -> bands -> candidate pairs
 _CAND_CTE = _SHINGLES_CTE.format(where="") + "," + _MINHASH_SIG_CTE + "," + _MINHASH_CAND_CTE
+
+# the candidates beside each document's word list ``w2``: what the
+# BLEU/ROUGE pair oracles start from
+_CAND_WORDS_CTE = (
+    _CAND_CTE
+    + """,
+    w2 AS (
+        SELECT doc_id AS id,
+               list_filter(string_split(text, ' '), x -> x != '') AS ws
+        FROM documents
+    )"""
+)
 
 # the ingestion gate: the batch documents (id >= 250) with a verified
 # near-dup in the corpus (id < 250), from ``sig`` on
@@ -128,6 +141,19 @@ def _jaccard_pairs_cte(name: str, src: str, sizes: str = "sizes", cols: str = "i
         JOIN {sizes} sb ON sb.id = id_b
         WHERE common / (sa.n + sb.n - common) >= 0.5
     )"""
+
+
+# the exact near-duplicate pairs (``truth``) beside the MinHash signatures
+# (``sig``): what the candidate-recall oracles start from
+_TRUTH_AND_SIG_CTES = (
+    _SHINGLES_CTE.format(where="")
+    + ","
+    + _ALL_PAIRS_CTE
+    + ","
+    + _jaccard_pairs_cte("truth", "inter")
+    + ","
+    + _MINHASH_SIG_CTE
+)
 
 
 @query(
@@ -891,13 +917,7 @@ def dd_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dd_lsh_recall",
     bench=False,
     oracle="WITH "
-    + _SHINGLES_CTE.format(where="")
-    + ","
-    + _ALL_PAIRS_CTE
-    + ","
-    + _jaccard_pairs_cte("truth", "inter")
-    + ","
-    + _MINHASH_SIG_CTE
+    + _TRUTH_AND_SIG_CTES
     + ","
     + _MINHASH_CAND_CTE
     + """,
@@ -974,9 +994,7 @@ def dd_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters = duplicate_clusters(
         docs.select(F.col("doc_id").alias("id")), pairs
     )
-    h = F.conv(
-        F.substring(F.md5(F.col("cluster_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    h = md5_long(F.col("cluster_id").cast("string"))
     return clusters.select(
         F.col("id").alias("doc_id"),
         "cluster_id",
@@ -1206,10 +1224,7 @@ def dd_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id", F.posexplode(words(F.col("text"))).alias("pos0", "w")
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "w")
-    bd = (
-        F.conv(F.substring(F.md5(F.col("w")), 1, 15), 16, 10).cast("long") % 16
-        == 0
-    ).cast("long")
+    bd = (md5_long(F.col("w")) % 16 == 0).cast("long")
     win = (
         Window.partitionBy("doc_id")
         .orderBy("pos")
@@ -1300,15 +1315,7 @@ def dd_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = D.word_shingles(docs)
     sig = D.minhash_signatures(D.word_shingle_stream(docs))
     cand = D.lsh_candidate_pairs(sig)
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
-    a = sh.select(F.col("id").alias("id_a"), "g")
-    b = sh.select(F.col("id").alias("id_b"), "g")
-    common = (
-        cand.join(a, "id_a")
-        .join(b, ["id_b", "g"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("common"))
-    )
+    common, sizes = D.shingle_overlap(cand, sh)
     sx = sig.select(
         F.col("id").alias("id_a"), *[F.col(f"mh{j}").alias(f"xa{j}") for j in range(8)]
     )
@@ -1359,13 +1366,7 @@ def _band_cfg_sql(bands: int, rows: int) -> str:
 @query(
     "dd_band_curve",
     oracle="WITH "
-    + _SHINGLES_CTE.format(where="")
-    + ","
-    + _ALL_PAIRS_CTE
-    + ","
-    + _jaccard_pairs_cte("truth", "inter")
-    + ","
-    + _MINHASH_SIG_CTE
+    + _TRUTH_AND_SIG_CTES
     + f""",
     bands AS (
         {_band_cfg_sql(8, 1)}
@@ -1458,13 +1459,8 @@ def dd_band_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dd_bleu_pairs",
     oracle="WITH "
-    + _CAND_CTE
+    + _CAND_WORDS_CTE
     + """,
-    w2 AS (
-        SELECT doc_id AS id,
-               list_filter(string_split(text, ' '), x -> x != '') AS ws
-        FROM documents
-    ),
     grams AS (
         SELECT id, 1 AS n, u AS g FROM w2, UNNEST(ws) AS t(u)
         UNION ALL
@@ -1618,13 +1614,8 @@ def dd_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dd_rouge_pairs",
     oracle="WITH "
-    + _CAND_CTE
+    + _CAND_WORDS_CTE
     + """,
-    w2 AS (
-        SELECT doc_id AS id,
-               list_filter(string_split(text, ' '), x -> x != '') AS ws
-        FROM documents
-    ),
     cnts AS (
         SELECT id, u AS g, COUNT(*) AS c
         FROM w2, UNNEST(ws) AS t(u) GROUP BY 1, 2

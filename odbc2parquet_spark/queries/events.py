@@ -15,7 +15,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from odbc2parquet_spark.catalog import load_table
+from odbc2parquet_spark.functions.hashing import md5_long
 from odbc2parquet_spark.operators.asof import asof_join
+from odbc2parquet_spark.operators.sketches import hll_estimate_from_registers, hll_registers
 from odbc2parquet_spark.queries import query
 from odbc2parquet_spark.streaming.transfer import (
     sessionized_counts,
@@ -119,6 +121,27 @@ def _asof_purchase_sql(cond: str) -> str:
     """
 
 
+def _asof_purchase(spark: SparkSession, sf_dir: str, direction: str) -> DataFrame:
+    """The Spark side of :func:`_asof_purchase_sql`, as-of ``direction``."""
+    ev = load_table(spark, sf_dir, "events")
+    clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
+    purchases = (
+        ev.filter(F.col("event_type") == "purchase")
+        .groupBy("user_id", "ts")
+        .agg(F.max("value").alias("purchase_value"))
+    )
+    out = asof_join(
+        clicks, purchases, key="user_id", left_ts="ts", right_ts="ts", direction=direction
+    )
+    return out.select(
+        "event_id",
+        "user_id",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
+        F.unix_micros(F.col("r_ts").cast("timestamp")).alias("r_ts_us"),
+        "r_purchase_value",
+    )
+
+
 @query(
     "ev_asof_last_purchase",
     oracle=_asof_purchase_sql("c.ts >= p.ts"),
@@ -129,21 +152,7 @@ def ev_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     union + one shuffle/sort + running last_value — sort-merge cost, no
     time-overlap fan-out. The oracle is DuckDB's NATIVE ASOF JOIN, so the
     two independent formulations must agree row-for-row."""
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("purchase_value"))
-    )
-    out = asof_join(clicks, purchases, key="user_id", left_ts="ts", right_ts="ts")
-    return out.select(
-        "event_id",
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        F.unix_micros(F.col("r_ts").cast("timestamp")).alias("r_ts_us"),
-        "r_purchase_value",
-    )
+    return _asof_purchase(spark, sf_dir, "backward")
 
 
 def _bands() -> list[tuple[int, float, float]]:
@@ -1055,26 +1064,7 @@ def ev_asof_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     after it (conversion attribution). Same union + single-sort plan as
     the backward variant with the window direction flipped; verified
     against DuckDB's native forward ASOF JOIN."""
-    from odbc2parquet_spark.operators.asof import asof_join
-
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("purchase_value"))
-    )
-    out = asof_join(
-        clicks, purchases, key="user_id", left_ts="ts", right_ts="ts",
-        direction="forward",
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        F.unix_micros(F.col("r_ts").cast("timestamp")).alias("r_ts_us"),
-        "r_purchase_value",
-    )
+    return _asof_purchase(spark, sf_dir, "forward")
 
 
 #: the event's epoch day (``ts`` seconds div 86400), oracle side
@@ -1153,10 +1143,7 @@ def ev_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
-    jitter = (
-        F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10)
-        .cast("long") % 1200
-    ) * F.lit(1_000_000)
+    jitter = (md5_long(F.col("event_id").cast("string"), 8) % 1200) * F.lit(1_000_000)
     arrival = F.concat(
         F.lpad((us + jitter).cast("string"), 20, "0"),
         F.lit(":"),
@@ -1663,11 +1650,6 @@ def ev_hll_weekly_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash match IS the mergeability proof (MAX associativity): rollup
     hierarchies re-aggregate <= 2^p register rows per group instead of
     data, the property that makes sketch cubes cheap at 100 TB."""
-    from odbc2parquet_spark.operators.sketches import (
-        hll_estimate_from_registers,
-        hll_registers,
-    )
-
     ev = load_table(spark, sf_dir, "events")
     day = _epoch_day()
     week = F.floor(day / F.lit(7)).cast("long")
@@ -1706,11 +1688,6 @@ def ev_hll_cumulative(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimator per day. Register accumulation replaces re-sketching every
     prefix of the stream; the same register MAX-merge the weekly rollup
     proves (ev_hll_weekly_users), applied cumulatively."""
-    from odbc2parquet_spark.operators.sketches import (
-        hll_estimate_from_registers,
-        hll_registers,
-    )
-
     ev = load_table(spark, sf_dir, "events")
     day = _epoch_day()
     regs = hll_registers(
@@ -1986,10 +1963,9 @@ def ev_kmv_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     and drops the exact pass (q_exact_median documents the histogram
     cutover)."""
     ev = load_table(spark, sf_dir, "events")
-    from odbc2parquet_spark.operators.sampling import _hash60
 
     h = ev.select(
-        "event_type", "event_id", "value", _hash60(F.col("event_id")).alias("hk")
+        "event_type", "event_id", "value", md5_long(F.col("event_id").cast("string")).alias("hk")
     )
     samp = (
         h.withColumn(

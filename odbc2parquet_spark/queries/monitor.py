@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from odbc2parquet_spark.catalog import load_table
+from odbc2parquet_spark.functions.hashing import md5_long
 from odbc2parquet_spark.operators.drift import (
     chi_square_independence,
     correlation_matrix,
@@ -278,36 +279,49 @@ def q_chi_square_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chi_square_independence(orders, "o_orderpriority", "o_orderstatus")
 
 
-@query(
-    "sim_covariance",
-    oracle="""
-    WITH cx AS (
+#: each embedding component as the exact integer of its 6-decimal value
+_CX_CTE = """cx AS (
         SELECT vec_id, i - 1 AS dim,
                CAST(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(18,6))
                     * 1000000 AS BIGINT) AS x6
         FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS t(i)
-    ),
+    )"""
+
+#: ``cx``, its per-dimension sums ``sums`` and upper-triangle cross sums
+#: ``prs``, and the sample covariance ``covq`` (i, j, n, cov)
+_COV_CTE = (
+    _CX_CTE
+    + """,
     sums AS (
         SELECT dim, SUM(x6) AS sx FROM cx GROUP BY 1
     ),
-    pairs AS (
+    prs AS (
         SELECT a.dim AS i, b.dim AS j,
                SUM(a.x6 * b.x6) AS sxy,
                CAST(COUNT(*) AS BIGINT) AS n
         FROM cx a JOIN cx b ON a.vec_id = b.vec_id AND a.dim <= b.dim
         GROUP BY 1, 2
-    )
-    SELECT CAST(p.i AS BIGINT) AS i, CAST(p.j AS BIGINT) AS j, p.n AS n,
-           ROUND((CAST(p.sxy AS DOUBLE)
-                  - CAST(si.sx AS DOUBLE) * CAST(sj.sx AS DOUBLE)
-                      / CAST(p.n AS DOUBLE))
-                 / 1000000000000.0
-                 / CAST(p.n - 1 AS DOUBLE),
-                 6) + 0.0 AS cov
-    FROM pairs p
-    JOIN sums si ON si.dim = p.i
-    JOIN sums sj ON sj.dim = p.j
-    ORDER BY 1, 2
+    ),
+    covq AS (
+        SELECT CAST(p.i AS BIGINT) AS i, CAST(p.j AS BIGINT) AS j, p.n AS n,
+               ROUND((CAST(p.sxy AS DOUBLE)
+                      - CAST(si.sx AS DOUBLE) * CAST(sj.sx AS DOUBLE)
+                          / CAST(p.n AS DOUBLE))
+                     / 1000000000000.0
+                     / CAST(p.n - 1 AS DOUBLE),
+                     6) + 0.0 AS cov
+        FROM prs p
+        JOIN sums si ON si.dim = p.i
+        JOIN sums sj ON sj.dim = p.j
+    )"""
+)
+
+
+@query(
+    "sim_covariance",
+    oracle=f"""
+    WITH {_COV_CTE}
+    SELECT i, j, n, cov FROM covq ORDER BY 1, 2
     """,
 )
 def sim_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -328,13 +342,8 @@ def sim_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_correlation",
-    oracle="""
-    WITH cx AS (
-        SELECT vec_id, i - 1 AS dim,
-               CAST(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(18,6))
-                    * 1000000 AS BIGINT) AS x6
-        FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS t(i)
-    ),
+    oracle=f"""
+    WITH {_CX_CTE},
     sums AS (
         SELECT dim, CAST(SUM(x6) AS DECIMAL(38,0)) AS sx FROM cx GROUP BY 1
     ),
@@ -797,37 +806,6 @@ def ev_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COV_CTE = """
-    cx AS (
-        SELECT vec_id, i - 1 AS dim,
-               CAST(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(18,6))
-                    * 1000000 AS BIGINT) AS x6
-        FROM embeddings, UNNEST(generate_series(1, len(embedding))) AS t(i)
-    ),
-    sums AS (
-        SELECT dim, SUM(x6) AS sx FROM cx GROUP BY 1
-    ),
-    prs AS (
-        SELECT a.dim AS i, b.dim AS j,
-               SUM(a.x6 * b.x6) AS sxy,
-               CAST(COUNT(*) AS BIGINT) AS n
-        FROM cx a JOIN cx b ON a.vec_id = b.vec_id AND a.dim <= b.dim
-        GROUP BY 1, 2
-    ),
-    covq AS (
-        SELECT CAST(p.i AS BIGINT) AS i, CAST(p.j AS BIGINT) AS j,
-               ROUND((CAST(p.sxy AS DOUBLE)
-                      - CAST(si.sx AS DOUBLE) * CAST(sj.sx AS DOUBLE)
-                          / CAST(p.n AS DOUBLE))
-                     / 1000000000000.0
-                     / CAST(p.n - 1 AS DOUBLE),
-                     6) + 0.0 AS cov
-        FROM prs p
-        JOIN sums si ON si.dim = p.i
-        JOIN sums sj ON sj.dim = p.j
-    )"""
-
-
 def _pca_iter_sql(k: int) -> str:
     # every CTE is MATERIALIZED and references its predecessor ONCE (the
     # max-normalizer is a window, not a second CTE reference): DuckDB
@@ -953,17 +931,7 @@ def ev_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     assigned = ev.filter(F.col("event_type").isin("view", "purchase")).select(
         F.when(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("exp:"), F.col("user_id").cast("string"))),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 2
-            == 0,
+            md5_long(F.concat(F.lit("exp:"), F.col("user_id").cast("string"))) % 2 == 0,
             F.lit("A"),
         )
         .otherwise(F.lit("B"))

@@ -21,6 +21,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from odbc2parquet_spark.catalog import load_table
+from odbc2parquet_spark.functions.hashing import md5_long
 from odbc2parquet_spark.queries import query
 
 
@@ -1840,7 +1841,6 @@ def q_join_card_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     never touches the join itself; the exact side is the verification
     tier."""
     ev = load_table(spark, sf_dir, "events")
-    from odbc2parquet_spark.operators.sampling import _hash60
 
     a = (
         ev.filter(F.col("event_type") == "click")
@@ -1856,7 +1856,7 @@ def q_join_card_est(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.select("user_id")
         .union(b.select("user_id"))
         .distinct()
-        .select("user_id", _hash60(F.col("user_id")).alias("hk"))
+        .select("user_id", md5_long(F.col("user_id").cast("string")).alias("hk"))
     )
     samp = (
         u.withColumn("rn", F.row_number().over(W.orderBy("hk")))
@@ -1932,17 +1932,7 @@ def q_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     c = orders.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n_true"))
     noise = (
-        F.bit_count(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("dp-hist-1|"), F.col("o_orderpriority"))),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-        )
+        F.bit_count(md5_long(F.concat(F.lit("dp-hist-1|"), F.col("o_orderpriority"))))
         - 30
     ).cast("long")
     return c.select(

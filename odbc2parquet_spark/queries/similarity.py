@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from odbc2parquet_spark import cachereg
 from odbc2parquet_spark.catalog import footer_row_count, load_table, table_path
+from odbc2parquet_spark.functions.hashing import md5_long
 from odbc2parquet_spark.operators import similarity as S
 from odbc2parquet_spark.queries import query
 
@@ -85,14 +86,14 @@ _DOT = (
 )
 
 
-def _norms_cte(name: str) -> str:
-    """``name``: every embedding with its squared norm ``nsq``."""
+def _norms_cte(name: str, where: str = "") -> str:
+    """``name``: every embedding ``where`` keeps, with its squared norm ``nsq``."""
     return f"""
     {name} AS (
         SELECT vec_id, embedding,
                list_sum(list_transform(embedding,
                         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nsq
-        FROM embeddings
+        FROM embeddings{where}
     )"""
 
 
@@ -197,34 +198,51 @@ _PQ_M = 32
 _PQ_SUB = 2
 _PQ_K = 256
 
+
+def _centroids_cte(where: str) -> str:
+    """``cent``: the first ``_K_CELLS`` embeddings of those ``where``
+    keeps, as IVF centroids; ``nc``: each with its squared norm ``csq``."""
+    return f"""
+    cent AS (
+        SELECT vec_id AS centroid_id, embedding AS centroid
+        FROM embeddings{where} ORDER BY vec_id LIMIT {_K_CELLS}
+    ),
+    nc AS (
+        SELECT centroid_id, centroid,
+               list_sum(list_transform(centroid,
+                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS csq
+        FROM cent
+    )"""
+
+
+def _cos4_cte(name: str, vectors: str) -> str:
+    """``name``: the cosine, rounded to 4, of every ``vectors`` row (with
+    ``nsq``) to every centroid of ``nc``."""
+    return f"""
+    {name} AS (
+        SELECT v.vec_id, c.centroid_id,
+               ROUND(list_sum(list_transform(
+                        list_zip(v.embedding, c.centroid),
+                        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+                     / SQRT(v.nsq * c.csq), 4) AS cos4
+        FROM {vectors} v CROSS JOIN nc c
+    )"""
+
+
 _CENT_CTE = (
-    f"""
-cent AS (
-    SELECT vec_id AS centroid_id, embedding AS centroid
-    FROM embeddings ORDER BY vec_id LIMIT {_K_CELLS}
-),"""
+    _centroids_cte("")
+    + ","
     + _norms_cte("nv")
+    + ","
+    + _cos4_cte("assign_scored", "nv")
     + """,
-nc AS (
-    SELECT centroid_id, centroid,
-           list_sum(list_transform(centroid,
-                    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS csq
-    FROM cent
-),
-assign_scored AS (
-    SELECT v.vec_id, c.centroid_id,
-           ROUND(list_sum(list_transform(list_zip(v.embedding, c.centroid),
-                    x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                 / SQRT(v.nsq * c.csq), 4) AS cos4
-    FROM nv v CROSS JOIN nc c
-),
-assign AS (
-    SELECT vec_id, centroid_id, cos4 FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                     ORDER BY cos4 DESC, centroid_id) AS rnk
-        FROM assign_scored
-    ) WHERE rnk = 1
-)"""
+    assign AS (
+        SELECT vec_id, centroid_id, cos4 FROM (
+            SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+                                         ORDER BY cos4 DESC, centroid_id) AS rnk
+            FROM assign_scored
+        ) WHERE rnk = 1
+    )"""
 )
 
 
@@ -609,6 +627,28 @@ def sim_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_assign(emb, cb, m=_PQ_M)
 
 
+def _pq_codes_ctes(p: str, sub: str) -> str:
+    """CTEs ``{p}scored``, the squared distance of every ``sub`` slice to
+    every ``{p}cb`` codeword of its subspace, and ``{p}codes``, each
+    slice's nearest codeword (ties to the lowest cid)."""
+    return f"""
+    {p}scored AS (
+        SELECT {sub}.vec_id, {sub}.subspace, {p}cb.cid,
+               list_sum(list_transform(list_zip({sub}.v8, {p}cb.c8),
+                        x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))
+                           * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))))
+                   AS d2
+        FROM {sub} JOIN {p}cb ON {p}cb.subspace = {sub}.subspace
+    ),
+    {p}codes AS (
+        SELECT vec_id, subspace, cid AS code FROM (
+            SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, subspace
+                                         ORDER BY d2, cid) AS rn
+            FROM {p}scored
+        ) WHERE rn = 1
+    )"""
+
+
 def _pq_index_ctes(p: str = "") -> str:
     """The PQ index as DuckDB CTEs (codebook -> codes -> probe LUT) —
     ONE SQL definition shared by sim_pq_adc_topk, sim_pq_recall and
@@ -629,22 +669,7 @@ def _pq_index_ctes(p: str = "") -> str:
         SELECT cid, CAST(t.s AS INTEGER) AS subspace,
                list_slice(embedding, s * {_PQ_SUB} + 1, s * {_PQ_SUB} + {_PQ_SUB}) AS c8
         FROM {p}seeds, UNNEST(generate_series(0, {_PQ_M - 1})) AS t(s)
-    ),
-    {p}scored AS (
-        SELECT {p}sub.vec_id, {p}sub.subspace, {p}cb.cid,
-               list_sum(list_transform(list_zip({p}sub.v8, {p}cb.c8),
-                        x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))
-                           * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))))
-                   AS d2
-        FROM {p}sub JOIN {p}cb ON {p}cb.subspace = {p}sub.subspace
-    ),
-    {p}codes AS (
-        SELECT vec_id, subspace, cid AS code FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, subspace
-                                         ORDER BY d2, cid) AS rn
-            FROM {p}scored
-        ) WHERE rn = 1
-    ),
+    ),""" + _pq_codes_ctes(p, f"{p}sub") + f""",
     {p}psub AS (
         SELECT vec_id AS query_id, subspace, v8 AS p8 FROM {p}sub WHERE vec_id < 10
     ),
@@ -864,9 +889,6 @@ def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall10(emb, probes, adc)
 
 
-#: one Lloyd step on the PQ codebook + re-derived codes/LUT/ADC — appended
-#: after _pq_index_ctes(); mirrors operators/similarity.pq_refine_codebook
-#: (decimal-exact per-position means, round 6, float cast; dead cells drop).
 def _pq_lloyd_iter_ctes(src_codes: str, p: str) -> str:
     """ONE Lloyd step as CTEs: read assigned codes ``src_codes``, emit a
     refined codebook ``{p}cb`` and re-derived codes ``{p}codes`` —
@@ -891,22 +913,7 @@ def _pq_lloyd_iter_ctes(src_codes: str, p: str) -> str:
         SELECT subspace, code AS cid,
                list_transform(list(mval ORDER BY pos), x -> CAST(x AS FLOAT)) AS c8
         FROM {p}mean GROUP BY 1, 2
-    ),
-    {p}scored AS (
-        SELECT sub.vec_id, sub.subspace, {p}cb.cid,
-               list_sum(list_transform(list_zip(sub.v8, {p}cb.c8),
-                        x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))
-                           * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))))
-                   AS d2
-        FROM sub JOIN {p}cb ON {p}cb.subspace = sub.subspace
-    ),
-    {p}codes AS (
-        SELECT vec_id, subspace, cid AS code FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, subspace
-                                         ORDER BY d2, cid) AS rn
-            FROM {p}scored
-        ) WHERE rn = 1
-    )"""
+    ),""" + _pq_codes_ctes(p, "sub")
 
 
 def _pq_adc_from(cb: str, codes: str) -> str:
@@ -1301,22 +1308,14 @@ def sim_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
         "anchor",
         "slot",
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("neg:"),
-                            F.col("anchor").cast("string"),
-                            F.lit(":"),
-                            F.col("slot").cast("string"),
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
+            md5_long(
+                F.concat(
+                    F.lit("neg:"),
+                    F.col("anchor").cast("string"),
+                    F.lit(":"),
+                    F.col("slot").cast("string"),
+                )
+            )
             % total
         ).alias("cand_id"),
     ).filter(F.col("cand_id") != F.col("anchor"))
@@ -2289,9 +2288,7 @@ def sim_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = dw.select(
         "doc_id",
         "w",
-        (F.conv(F.substring(F.md5("w"), 1, 4), 16, 10).cast("long") % 65536).alias(
-            "h16"
-        ),
+        (md5_long("w", 4) % 65536).alias("h16"),
     )
     qt = (
         h.filter(F.col("doc_id") == 0)
@@ -2540,11 +2537,7 @@ def sim_cell_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
     # second decade uncapped, linear with the cap
     srk = F.row_number().over(
         Window.partitionBy("centroid_id").orderBy(
-            F.conv(
-                F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15),
-                16,
-                10,
-            ).cast("long"),
+            md5_long(F.col("vec_id").cast("string")),
             F.col("vec_id"),
         )
     )
@@ -2604,39 +2597,30 @@ def sim_cell_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _delta_scored_ctes(delta: str, scored: str) -> str:
+    """CTEs ``cent`` and ``nc``: the IVF centroids seeded from the old
+    corpus (vec_id < 400); ``delta``: the new vectors (vec_id >= 400) with
+    their squared norms; ``scored``: the cos4 of every new vector to every
+    centroid."""
+    return (
+        _centroids_cte(" WHERE vec_id < 400")
+        + ","
+        + _norms_cte(delta, " WHERE vec_id >= 400")
+        + ","
+        + _cos4_cte(scored, delta)
+    )
+
+
 @query(
     "sim_ivf_delta_assign",
     oracle=f"""
-    WITH cent AS (
-        SELECT vec_id AS centroid_id, embedding AS centroid
-        FROM embeddings WHERE vec_id < 400 ORDER BY vec_id LIMIT {{k}}
-    ),
-    nc AS (
-        SELECT centroid_id, centroid,
-               list_sum(list_transform(centroid,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS csq
-        FROM cent
-    ),
-    delta AS (
-        SELECT vec_id, embedding,
-               list_sum(list_transform(embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nsq
-        FROM embeddings WHERE vec_id >= 400
-    ),
-    scored AS (
-        SELECT v.vec_id, c.centroid_id,
-               ROUND(list_sum(list_transform(
-                        list_zip(v.embedding, c.centroid),
-                        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                     / SQRT(v.nsq * c.csq), 4) AS cos4
-        FROM delta v CROSS JOIN nc c
-    )
+    WITH {_delta_scored_ctes("delta", "scored")}
     SELECT vec_id, centroid_id, cos4 FROM (
         SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
                                      ORDER BY cos4 DESC, centroid_id) AS rnk
         FROM scored
     ) WHERE rnk = 1
-    """.replace("{k}", str(_K_CELLS)),
+    """,
 )
 def sim_ivf_delta_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental IVF index MAINTENANCE: a new ingest batch (vec_id >=

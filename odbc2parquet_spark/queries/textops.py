@@ -7,11 +7,12 @@ every value bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from odbc2parquet_spark import cachereg
 from odbc2parquet_spark.catalog import load_table, spread_scan
+from odbc2parquet_spark.functions.hashing import md5_long
 from odbc2parquet_spark.operators import multimodal as M
 from odbc2parquet_spark.operators import text as X
 from odbc2parquet_spark.queries import query
@@ -28,6 +29,7 @@ from odbc2parquet_spark.queries.similarity import (
     _EXACT_TOP_CTE,
     _IVF_PQ_CTES,
     _adc_top_cte,
+    _delta_scored_ctes,
     _hits_cte,
 )
 
@@ -83,6 +85,21 @@ _QUALITY_SCORE = """(CASE WHEN n_words >= 10 THEN 0.25 ELSE 0.0 END)
                + (CASE WHEN (n_chars - (n_words - 1)) / n_words >= 3
                         AND (n_chars - (n_words - 1)) / n_words <= 10
                   THEN 0.25 ELSE 0.0 END)"""
+
+
+def _quality_ctes(base: str, cols: str) -> str:
+    """CTEs ``base``: ``cols`` of every document with the quality inputs;
+    ``q``: ``cols`` with the composite ``quality_score``."""
+    return f"""{base} AS (
+        SELECT {cols},
+               {_QUALITY_INPUTS}
+        FROM documents
+    ),
+    q AS (
+        SELECT {cols},
+               {_QUALITY_SCORE} AS quality_score
+        FROM {base}
+    )"""
 
 
 @query(
@@ -231,16 +248,7 @@ def mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: and tx_pipeline_funnel oracles so both certify the SAME stage chain —
 #: mirrors operators/pipelines._corpus_stages on the Spark side.
 _PIPE_STAGES_CTES = (
-    f"""    qbase AS (
-        SELECT doc_id, text,
-               {_QUALITY_INPUTS}
-        FROM documents
-    ),
-    q AS (
-        SELECT doc_id, text,
-               {_QUALITY_SCORE} AS quality_score
-        FROM qbase
-    ),
+    f"""    {_quality_ctes("qbase", "doc_id, text")},
     gated AS (SELECT * FROM q WHERE quality_score >= 0.5),
     keepers AS (SELECT MIN(doc_id) AS doc_id FROM gated GROUP BY md5(text)),
     exact AS (SELECT g.* FROM gated g JOIN keepers k ON g.doc_id = k.doc_id),
@@ -370,6 +378,25 @@ def tx_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _rate_sample_sql(col: str) -> str:
+    """The documents (doc_id, ``col``) a keep-rate sample takes: CTE
+    ``rated`` (src, n, w, ratio) gives each ``col`` value its weight,
+    the binding one is kept whole, and rates are quantized as
+    ``operators/sampling._rate_sample`` quantizes them."""
+    return f"""
+    t AS (SELECT MIN(ratio) AS t FROM rated),
+    thr AS (
+        SELECT src,
+               CAST(FLOOR(w * t.t / n * {1 << 40}) AS BIGINT) * {1 << 20} AS thr
+        FROM rated CROSS JOIN t
+    )
+    SELECT d.doc_id, d.{col}
+    FROM documents d JOIN thr ON thr.src = d.{col}
+    WHERE CAST('0x' || substring(md5(CAST(d.doc_id AS VARCHAR)), 1, 15) AS BIGINT)
+          < thr.thr
+    """
+
+
 @query(
     "tx_mixture_sample",
     bench=False,
@@ -383,18 +410,8 @@ def tx_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rated AS (
         SELECT c.src, c.n, wts.w, c.n / wts.w AS ratio
         FROM counts c JOIN wts ON wts.src = c.src
-    ),
-    t AS (SELECT MIN(ratio) AS t FROM rated),
-    thr AS (
-        SELECT src,
-               CAST(FLOOR(w * t.t / n * {1 << 40}) AS BIGINT) * {1 << 20} AS thr
-        FROM rated CROSS JOIN t
-    )
-    SELECT d.doc_id, d.source
-    FROM documents d JOIN thr ON thr.src = d.source
-    WHERE CAST('0x' || substring(md5(CAST(d.doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-          < thr.thr
-    """,
+    ),"""
+    + _rate_sample_sql("source"),
 )
 def tx_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus mixture reweighting to 50/25/25 across three sources — the
@@ -1005,8 +1022,7 @@ def tx_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     the split column is what a 100 TB run writes as a partition key."""
     docs = load_table(spark, sf_dir, "documents")
     slot = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))), 1, 15), 16, 10)
-        .cast("long") % 100
+        md5_long(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))) % 100
     )
     split = (
         F.when(slot < 90, "train").when(slot < 95, "val").otherwise("test")
@@ -1100,16 +1116,7 @@ def tx_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "tx_quality_calibrated",
     oracle=f"""
-    WITH qbase AS (
-        SELECT doc_id, source,
-               {_QUALITY_INPUTS}
-        FROM documents
-    ),
-    q AS (
-        SELECT doc_id, source,
-               {_QUALITY_SCORE} AS quality_score
-        FROM qbase
-    )
+    WITH {_quality_ctes("qbase", "doc_id, source")}
     SELECT doc_id, source, ROUND(quality_score, 6) AS raw_quality,
            ROUND(PERCENT_RANK() OVER (PARTITION BY source
                                       ORDER BY quality_score, doc_id), 6)
@@ -1348,6 +1355,12 @@ def _audio_pcm_cte(keep: str = "", alias: str = "") -> str:
     )"""
 
 
+def _wav_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every document encoded as a WAV and decoded back to its PCM sample
+    folds (M.decode_audio_samples)."""
+    return M.decode_audio_samples(M.encode_wav(load_table(spark, sf_dir, "documents")))
+
+
 @query(
     "mm_audio_rms",
     oracle="WITH "
@@ -1370,9 +1383,7 @@ def mm_audio_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL — a hash match proves the Python path decodes true PCM, not a
     stand-in. PCM needs no codec lib, so this closes the 'deep sample
     decode stubbed' gap for audio."""
-    docs = load_table(spark, sf_dir, "documents")
-    raw = M.decode_audio_samples(M.encode_wav(docs))
-    return raw.select(
+    return _wav_samples(spark, sf_dir).select(
         "doc_id",
         "n_int16",
         "peak",
@@ -1519,6 +1530,32 @@ def _frame_bytes_cte(where: str = "") -> str:
     )"""
 
 
+#: ``_frame_bytes_cte`` and ``d``, the md5 digest ``g`` of each sample's bytes
+_FRAME_DIGEST_CTES = (
+    _frame_bytes_cte()
+    + """,
+    d AS (
+        SELECT doc_id, i,
+               md5(string_agg(CAST(byte AS VARCHAR), ',' ORDER BY off)) AS g
+        FROM b GROUP BY doc_id, i
+    )"""
+)
+
+#: ``_frame_bytes_cte`` and ``d``, the 60-bit signature ``sig`` of each
+#: sample's bytes
+_FRAME_SIG_CTES = (
+    _frame_bytes_cte()
+    + """,
+    d AS (
+        SELECT doc_id, i,
+               CAST('0x' || substring(
+                   md5(string_agg(CAST(byte AS VARCHAR), ',' ORDER BY off)),
+                   1, 15) AS BIGINT) AS sig
+        FROM b GROUP BY doc_id, i
+    )"""
+)
+
+
 @query(
     "mm_frame_index",
     oracle="WITH "
@@ -1548,16 +1585,7 @@ def mm_frame_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "tx_source_cap",
     oracle=f"""
-    WITH base AS (
-        SELECT doc_id, source,
-               {_QUALITY_INPUTS}
-        FROM documents
-    ),
-    q AS (
-        SELECT doc_id, source,
-               {_QUALITY_SCORE} AS quality_score
-        FROM base
-    ),
+    WITH {_quality_ctes("base", "doc_id, source")},
     r AS (
         SELECT *, ROW_NUMBER() OVER (PARTITION BY source
                                      ORDER BY quality_score DESC, doc_id) AS rk
@@ -2193,13 +2221,9 @@ def tx_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges at the gate SF are a seed-free constant, so the oracle pins
     the full per-source report as literal VALUES — any drift in
     learn/encode/count logic flips the hash. (SF-specific pin by
-    construction; cross-SF behavior is covered by the bpe pytest
-    properties.)
-
-    NOTE: the oracle pins constants measured on the sf0.01 corpus (the
-    driver's correctness gate); running this pair at another SF
-    mismatches BY DESIGN — the algorithm itself is SF-independent and
-    pytest-pinned.
+    construction, mismatching at any other SF by design, as
+    tx_bpe_learn50's does; cross-SF behavior is covered by the bpe
+    pytest properties.)
     """
     docs = load_table(spark, sf_dir, "documents")
     merges = X.bpe_learn_batched(docs, n_merges=20)
@@ -2232,15 +2256,8 @@ def tx_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "mm_scene_cut",
     oracle="WITH "
-    + _frame_bytes_cte()
+    + _FRAME_SIG_CTES
     + """,
-    d AS (
-        SELECT doc_id, i,
-               CAST('0x' || substring(
-                   md5(string_agg(CAST(byte AS VARCHAR), ',' ORDER BY off)),
-                   1, 15) AS BIGINT) AS sig
-        FROM b GROUP BY doc_id, i
-    ),
     j AS (
         SELECT doc_id, sig,
                LAG(sig) OVER (PARTITION BY doc_id ORDER BY i) AS prev
@@ -2376,18 +2393,8 @@ def tx_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     rated AS (
         SELECT src, n, SQRT(n) AS w, n / SQRT(n) AS ratio FROM counts
-    ),
-    t AS (SELECT MIN(ratio) AS t FROM rated),
-    thr AS (
-        SELECT src,
-               CAST(FLOOR(w * t.t / n * {1 << 40}) AS BIGINT) * {1 << 20} AS thr
-        FROM rated CROSS JOIN t
-    )
-    SELECT d.doc_id, d.lang
-    FROM documents d JOIN thr ON thr.src = d.lang
-    WHERE CAST('0x' || substring(md5(CAST(d.doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-          < thr.thr
-    """,
+    ),"""
+    + _rate_sample_sql("lang"),
 )
 def tx_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature resampling at alpha = 0.5 across LANGUAGES
@@ -2407,13 +2414,8 @@ def tx_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "mm_video_neardup",
     oracle="WITH "
-    + _frame_bytes_cte()
+    + _FRAME_DIGEST_CTES
     + """,
-    d AS (
-        SELECT doc_id, i,
-               md5(string_agg(CAST(byte AS VARCHAR), ',' ORDER BY off)) AS g
-        FROM b GROUP BY doc_id, i
-    ),
     shh AS (
         SELECT DISTINCT doc_id AS id,
                CAST('0x' || substring(md5(g), 1, 15) AS BIGINT) AS gh
@@ -2538,6 +2540,20 @@ def tx_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return X.bigram_lm_scores(load_table(spark, sf_dir, "documents"))
 
 
+def _lm_terciles(lm: DataFrame, w: WindowSpec, *cols: str) -> DataFrame:
+    """``cols`` and avg_logprob of ``lm`` with ``bucket``, the row's
+    LM-score tercile in window ``w``: head (most fluent), middle, tail."""
+    nt = F.ntile(3).over(w)
+    return lm.select(
+        *cols,
+        "avg_logprob",
+        F.when(nt == 1, F.lit("head"))
+        .when(nt == 2, F.lit("middle"))
+        .otherwise(F.lit("tail"))
+        .alias("bucket"),
+    )
+
+
 @query(
     "tx_ccnet_buckets",
     oracle="WITH " + _LM_CTE + """
@@ -2557,16 +2573,7 @@ def tx_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     (approx_percentile then a broadcast compare), the same
     cutover documented for q_exact_median."""
     lm = X.bigram_lm_scores(load_table(spark, sf_dir, "documents"))
-    w = Window.orderBy(F.desc("avg_logprob"), F.asc("doc_id"))
-    nt = F.ntile(3).over(w)
-    return lm.select(
-        "doc_id",
-        "avg_logprob",
-        F.when(nt == 1, F.lit("head"))
-        .when(nt == 2, F.lit("middle"))
-        .otherwise(F.lit("tail"))
-        .alias("bucket"),
-    )
+    return _lm_terciles(lm, Window.orderBy(F.desc("avg_logprob"), F.asc("doc_id")), "doc_id")
 
 
 #: function-word probe set for THIS corpus (see tx_gopher_rules docstring)
@@ -2806,16 +2813,7 @@ def tx_ccnet_lang_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("lang").orderBy(
         F.desc("avg_logprob"), F.asc("doc_id")
     )
-    nt = F.ntile(3).over(w)
-    return lm.select(
-        "doc_id",
-        "lang",
-        "avg_logprob",
-        F.when(nt == 1, F.lit("head"))
-        .when(nt == 2, F.lit("middle"))
-        .otherwise(F.lit("tail"))
-        .alias("bucket"),
-    )
+    return _lm_terciles(lm, w, "doc_id", "lang")
 
 
 @query(
@@ -2846,9 +2844,7 @@ def mm_audio_clipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     mm_audio_rms (the kernel now also folds the at-peak count); the
     oracle rebuilds every sample byte-by-byte, so the count is
     hash-certified. Zero-shuffle: one Arrow decode pass, no exchange."""
-    docs = load_table(spark, sf_dir, "documents")
-    raw = M.decode_audio_samples(M.encode_wav(docs))
-    return raw.select(
+    return _wav_samples(spark, sf_dir).select(
         "doc_id",
         "n_int16",
         "peak",
@@ -3382,29 +3378,9 @@ def tx_neg_sample_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mm_keyframes",
-    oracle="""
-    WITH p AS (
-        SELECT doc_id, text, length(text) AS n,
-               length(text) % 24 + 1 AS ns
-        FROM documents
-    ),
-    s AS (
-        SELECT doc_id, text, n, t.i AS i, (t.i % 7) + 1 AS size_i,
-               28 * (t.i // 7) + ((t.i % 7) * ((t.i % 7) + 1)) // 2 AS p0
-        FROM p, UNNEST(generate_series(0, ns - 1)) AS t(i)
-    ),
-    b AS (
-        SELECT doc_id, i, size_i, p0 + u.j AS off,
-               ascii(substring(text, ((p0 + u.j) % n) + 1, 1)) AS byte
-        FROM s, UNNEST(generate_series(0, size_i - 1)) AS u(j)
-    ),
-    d AS (
-        SELECT doc_id, i,
-               CAST('0x' || substring(
-                   md5(string_agg(CAST(byte AS VARCHAR), ',' ORDER BY off)),
-                   1, 15) AS BIGINT) AS sig
-        FROM b GROUP BY doc_id, i
-    ),
+    oracle="WITH "
+    + _FRAME_SIG_CTES
+    + """,
     j AS (
         SELECT doc_id, i,
                CASE WHEN LAG(sig) OVER w IS NULL THEN NULL
@@ -3495,10 +3471,7 @@ def tx_hash_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(F.explode(X.words(F.col("text"))).alias("w"))
         .distinct()
     )
-    h = w.select(
-        "w",
-        F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long").alias("h1"),
-    )
+    h = w.select("w", md5_long("w").alias("h1"))
     dims = spark.createDataFrame([(64,), (256,), (1024,)], ["dim"])
     bucketed = h.crossJoin(F.broadcast(dims)).select(
         "dim", (F.col("h1") % F.col("dim")).alias("b")
@@ -3807,13 +3780,8 @@ def mm_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "mm_video_align",
     oracle="WITH "
-    + _frame_bytes_cte()
+    + _FRAME_DIGEST_CTES
     + """,
-    d AS (
-        SELECT doc_id, i,
-               md5(string_agg(CAST(byte AS VARCHAR), ',' ORDER BY off)) AS g
-        FROM b GROUP BY doc_id, i
-    ),
     lm AS (
         SELECT doc_id, CAST(i AS BIGINT) AS fi,
                CAST('0x' || substring(md5(g), 1, 15) AS BIGINT) AS l
@@ -3843,9 +3811,7 @@ def mm_video_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     lm = idx.select(
         "doc_id",
         F.col("sample_idx").cast("long").alias("fi"),
-        F.conv(F.substring(F.md5(F.col("digest")), 1, 15), 16, 10)
-        .cast("long")
-        .alias("l"),
+        md5_long(F.col("digest")).alias("l"),
     )
     probe = lm.filter(
         (F.col("doc_id") % 10 == 7) & (F.col("fi") >= 1)
@@ -4399,7 +4365,7 @@ def tx_decontaminate_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ELSE array() END"
         )
     ).alias("g")
-    h = F.conv(F.substring(F.md5(F.col("g")), 1, 15), 16, 10).cast("long")
+    h = md5_long(F.col("g"))
     eg = (
         ws.filter(F.col("doc_id") % 97 == 0)
         .select(gram)
@@ -4514,6 +4480,23 @@ def _curation_pipeline_oracle() -> str:
     """
 
 
+def _pack_inputs(
+    spark: SparkSession, sf_dir: str, docs: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """(keep, toks): the doc_ids tx_decontaminate_13gram keeps, and each
+    document's whitespace-token count (doc_id, n_tokens) — the eval gate
+    and the shard weights both curation pipelines pack with."""
+    from odbc2parquet_spark.queries import QUERIES
+
+    keep = (
+        QUERIES["tx_decontaminate_13gram"](spark, sf_dir)
+        .filter(F.col("keep_doc") == 1)
+        .select("doc_id")
+    )
+    toks = docs.select("doc_id", F.size(X.words(F.col("text"))).cast("long").alias("n_tokens"))
+    return keep, toks
+
+
 @query("tx_curation_pipeline", oracle=_curation_pipeline_oracle())
 def tx_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The END-TO-END curation pipeline at the composition level the
@@ -4545,18 +4528,7 @@ def tx_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("bucket") != "tail")
         .select("doc_id", "bucket")
     )
-    keep = (
-        QUERIES["tx_decontaminate_13gram"](spark, sf_dir)
-        .filter(F.col("keep_doc") == 1)
-        .select("doc_id")
-    )
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.size(F.filter(F.split(F.col("text"), " "), lambda x: x != ""))
-        .cast("long")
-        .alias("n_tokens"),
-    )
+    keep, toks = _pack_inputs(spark, sf_dir, load_table(spark, sf_dir, "documents"))
     # Persist the NARROW survivor table (doc_id, bucket, n_tokens — the
     # "decision rows", never the text): pack_shards_two_pass evaluates
     # its input three times (approx-quantile boundary pass, per-bucket
@@ -4703,9 +4675,7 @@ def tx_ccnet_cutpoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     tx_ccnet_buckets' NTILE is exact — the documented trade the curation
     pipeline makes when the corpus outgrows a single range partition."""
     lm = X.bigram_lm_scores(load_table(spark, sf_dir, "documents"))
-    hk = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    hk = md5_long(F.col("doc_id").cast("string"))
     samp = (
         lm.select("doc_id", "avg_logprob", hk.alias("hk"))
         .orderBy("hk", "doc_id")
@@ -4807,30 +4777,7 @@ def _curation_delta_oracle() -> str:
                OR (s.avg_logprob = c.c2s AND s.doc_id <= c.c2d))
     ),
     {_contaminated_cte("wq", " AND doc_id >= 250")},
-    cent AS (
-        SELECT vec_id AS centroid_id, embedding AS centroid
-        FROM embeddings WHERE vec_id < 400 ORDER BY vec_id LIMIT 16
-    ),
-    nc AS (
-        SELECT centroid_id, centroid,
-               list_sum(list_transform(centroid,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS csq
-        FROM cent
-    ),
-    dv AS (
-        SELECT vec_id, embedding,
-               list_sum(list_transform(embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nsq
-        FROM embeddings WHERE vec_id >= 400
-    ),
-    dscored AS (
-        SELECT v.vec_id, c.centroid_id,
-               ROUND(list_sum(list_transform(
-                        list_zip(v.embedding, c.centroid),
-                        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                     / SQRT(v.nsq * c.csq), 4) AS cos4
-        FROM dv v CROSS JOIN nc c
-    ),
+    {_delta_scored_ctes("dv", "dscored")},
     assigned AS (
         SELECT vec_id, centroid_id FROM (
             SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -4933,20 +4880,10 @@ def tx_curation_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "avg_logprob")
     )
-    keep = (
-        QUERIES["tx_decontaminate_13gram"](spark, sf_dir)
-        .filter(F.col("keep_doc") == 1)
-        .select("doc_id")
-    )
+    keep, toks = _pack_inputs(spark, sf_dir, docs)
     dstats = QUERIES["sim_ivf_delta_assign"](spark, sf_dir).agg(
         F.count("*").alias("delta_vecs"),
         F.countDistinct("centroid_id").alias("delta_cells"),
-    )
-    toks = docs.select(
-        "doc_id",
-        F.size(F.filter(F.split(F.col("text"), " "), lambda x: x != ""))
-        .cast("long")
-        .alias("n_tokens"),
     )
     # Persist the NARROW survivor table (doc_id, avg_logprob, n_tokens)
     # for the same reason as tx_curation_pipeline: pack_shards_two_pass

@@ -3,8 +3,10 @@
 Every oracle must plan in DuckDB over the sf0.001 tables, so a broken
 composition of shared CTEs (a lost comma, a misspelled CTE name) fails
 here and not in the next full oracle sweep. And each computation is
-written once: no run of string-literal lines in ``queries/``, and no run
-of code lines anywhere in the package, may be pasted at a second place.
+written once: no run of 6 string-literal lines in ``queries/``, and no
+run of 6 code lines anywhere in the package, may be pasted at a second
+place; and the md5 hash family is spelled in one module,
+``functions/hashing.py``, the only place that calls ``conv``.
 """
 
 from __future__ import annotations
@@ -20,7 +22,7 @@ from odbc2parquet_spark.queries import ORACLES
 
 PACKAGE_DIR = Path(__file__).resolve().parent.parent / "odbc2parquet_spark"
 QUERIES_DIR = PACKAGE_DIR / "queries"
-WINDOW = 10
+WINDOW = 6
 
 
 def test_every_oracle_plans_in_duckdb(sf_dir):
@@ -81,10 +83,17 @@ def test_no_oracle_sql_is_pasted_twice():
     )
 
 
-# Code runs that repeat, keyed by the top-level definitions holding the
-# later and the earlier copy. Only a parameter list shared by two different
-# algorithms belongs here: a repeated computation is folded into a helper.
-COPIES_ALLOWED: dict[tuple[str, str], str] = {}
+# Runs of 6 code lines that repeat, keyed by the top-level definitions
+# holding the later and the earlier copy. Only a parameter list shared by
+# two different algorithms belongs here: a repeated computation is folded
+# into a helper.
+COPIES_ALLOWED: dict[tuple[str, str], str] = {
+    (
+        "operators/similarity.py:ivf_pq_residual_search",
+        "operators/similarity.py:ivf_pq_search",
+    ): "the IVF-PQ parameter list (vectors, probes, nprobe, k_cells, m, "
+    "k_centroids); the residual search encodes v - c(cell), the plain one v",
+}
 
 
 def _code_lines(path: Path) -> list[tuple[int, str, str]]:
@@ -149,3 +158,18 @@ def test_no_package_code_is_pasted_twice():
 def test_copy_allowlist_has_no_stale_entry():
     stale = set(COPIES_ALLOWED) - {key for _, _, key in repeated_code()}
     assert not stale, f"no longer repeated, drop from COPIES_ALLOWED: {sorted(stale)}"
+
+
+def test_only_the_hash_module_calls_conv():
+    """Every md5-derived hash is built by ``functions/hashing.py``; a
+    ``conv`` call anywhere else is a second spelling of the hash family."""
+    hashing = PACKAGE_DIR / "functions" / "hashing.py"
+    calls = [
+        f"{path.relative_to(PACKAGE_DIR).as_posix()}:{node.lineno}"
+        for path in sorted(PACKAGE_DIR.rglob("*.py"))
+        if path != hashing
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "attr", getattr(node.func, "id", None)) == "conv"
+    ]
+    assert not calls, "hash through functions/hashing.py instead: " + ", ".join(calls)

@@ -101,8 +101,8 @@ def main() -> int:
             print(f"okNR  {name}: rows={len(srows)} (no oracle, rows-only) {spark_t:.1f}s")
             continue
         try:
-            rel = con.execute(oracles[name])
-            dcols = [d[0] for d in rel.description]
+            rel = con.sql(oracles[name])
+            dcols, dtypes = rel.columns, rel.types
             drows = rel.fetchall()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: duckdb error: {e}")
@@ -122,14 +122,9 @@ def main() -> int:
                         problems.append(f"{label} emits unhashable {type(v).__name__} cell")
                     elif isinstance(v, int) and not isinstance(v, bool) and abs(v) >= 2**63:
                         problems.append(f"{label} emits out-of-int64 integer")
-        try:
-            hug = [c for c, t in zip(con.sql(oracles[name]).columns,
-                                     con.sql(oracles[name]).types)
-                   if "HUGEINT" in str(t).upper()]
-            if hug:
-                problems.append(f"oracle HUGEINT columns {hug} (cast to BIGINT)")
-        except Exception:  # noqa: BLE001  (relation re-parse is best-effort)
-            pass
+        hug = [c for c, t in zip(dcols, dtypes) if "HUGEINT" in str(t).upper()]
+        if hug:
+            problems.append(f"oracle HUGEINT columns {hug} (cast to BIGINT)")
         if len(srows) != len(drows):
             problems.append(f"rowcount {len(srows)} vs {len(drows)}")
         if sc != dc:
