@@ -25,7 +25,6 @@ import sys
 
 
 def _add_connection_args(p: argparse.ArgumentParser) -> None:
-    p.add_argument("--tables-dir", help="directory of <table>.parquet files to register")
     p.add_argument("--jdbc-url", help="JDBC URL of a remote source")
     p.add_argument(
         "--dsn",
@@ -218,6 +217,7 @@ def _build_parser() -> argparse.ArgumentParser:
     sub = ap.add_subparsers(dest="cmd", required=True)
 
     q = sub.add_parser("query", help="SQL -> parquet")
+    q.add_argument("--tables-dir", help="directory of <table>.parquet files to register")
     _add_connection_args(q)
     _add_sink_args(q)
     q.add_argument("out", help="output path (.par file or directory)")
@@ -231,7 +231,6 @@ def _build_parser() -> argparse.ArgumentParser:
     ins.add_argument("table", help="target table name")
 
     ex = sub.add_parser("exec", help="parquet columns bound to ?col? placeholders")
-    _add_connection_args(ex)
     _add_dbapi_args(ex)
     ex.add_argument("input", help="input parquet path")
     ex.add_argument("statement", help="SQL with ?col? named placeholders")
@@ -351,21 +350,51 @@ def main(argv: list[str] | None = None) -> int:
         print(_emit_completions(parser, args.shell))
         return 0
 
+    # usage errors exit here, before the seconds-long session start
+    remote = getattr(args, "jdbc_url", None) or getattr(args, "dsn", None)
+    if args.cmd == "query" and args.tables_dir and remote:
+        raise SystemExit("--tables-dir may not be combined with --jdbc-url or --dsn.")
+    if args.cmd == "insert" and args.dbapi and remote:
+        raise SystemExit("--dbapi may not be combined with --jdbc-url or --dsn.")
     if getattr(args, "dsn", None) is not None or getattr(args, "prompt", False):
         _resolve_connection(args)
-    if args.cmd == "query" and args.params and args.jdbc_url and not args.tables_dir:
+    if args.cmd == "query" and args.params and args.jdbc_url:
         raise SystemExit(
             "Query parameters are not supported with --jdbc-url or --dsn: "
             "Spark's JDBC source sends the SQL text as is and cannot bind ?. "
             "Write the values into the SQL instead."
         )
-    # usage errors exit here, before the seconds-long session start
     if args.cmd == "query":
         if not (args.tables_dir or args.jdbc_url):
             raise SystemExit(
                 "Either --dsn, --jdbc-url or --tables-dir must be specified."
             )
-        encodings = _parse_encodings(args.parquet_column_encoding)
+        from odbc2parquet_spark.mappings import MappingOptions
+        from odbc2parquet_spark.sinks.parquet_sink import SinkOptions, check_options
+
+        mapping = MappingOptions(
+            avoid_decimal=args.avoid_decimal,
+            column_length_limit=args.column_length_limit,
+            length_limit_action=args.length_limit_action,
+        )
+        sink = SinkOptions(
+            compression=args.column_compression_default,
+            compression_level=args.column_compression_level_default,
+            batch_size_rows=args.batch_size_row,
+            batch_memory_bytes=args.batch_size_memory,
+            row_groups_per_file=args.row_groups_per_file,
+            file_size_threshold=args.file_size_threshold,
+            suffix_length=args.suffix_length,
+            no_empty_file=args.no_empty_file,
+            single_file=args.single_file or args.out.endswith(".par"),
+            column_encodings=_parse_encodings(args.parquet_column_encoding),
+            partition_by=tuple(args.partition_by),
+            cluster_by=tuple(args.cluster_by),
+        )
+        try:
+            check_options(sink, args.out)
+        except ValueError as exc:
+            raise SystemExit(str(exc))
     if args.cmd == "insert" and not (args.jdbc_url or args.dbapi):
         raise SystemExit("insert needs --dsn, --jdbc-url or --dbapi")
     if args.cmd == "exec" and not args.dbapi:
@@ -391,7 +420,6 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "query":
         from odbc2parquet_spark.engine import Engine
-        from odbc2parquet_spark.sinks.parquet_sink import SinkOptions
 
         sql = sys.stdin.read() if args.sql == "-" else args.sql
         if args.tables_dir:
@@ -407,27 +435,6 @@ def main(argv: list[str] | None = None) -> int:
             df.createOrReplaceTempView("__jdbc_result__")
             engine = Engine(spark)
             sql = "SELECT * FROM __jdbc_result__"
-        from odbc2parquet_spark.mappings import MappingOptions
-
-        mapping = MappingOptions(
-            avoid_decimal=args.avoid_decimal,
-            column_length_limit=args.column_length_limit,
-            length_limit_action=args.length_limit_action,
-        )
-        sink = SinkOptions(
-            compression=args.column_compression_default,
-            compression_level=args.column_compression_level_default,
-            batch_size_rows=args.batch_size_row,
-            batch_memory_bytes=args.batch_size_memory,
-            row_groups_per_file=args.row_groups_per_file,
-            file_size_threshold=args.file_size_threshold,
-            suffix_length=args.suffix_length,
-            no_empty_file=args.no_empty_file,
-            single_file=args.single_file or args.out.endswith(".par"),
-            column_encodings=encodings,
-            partition_by=tuple(args.partition_by),
-            cluster_by=tuple(args.cluster_by),
-        )
         if args.out == "-":
             # A8: parquet bytes to stdout (reference parquet_writer.rs:192-230)
             from odbc2parquet_spark.mappings import apply_mapping_options

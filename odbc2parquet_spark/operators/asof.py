@@ -1,6 +1,6 @@
 """As-of (point-in-time) join — an operator Spark's API lacks.
 
-``asof_join(left, right, key, ...)`` attaches to every left row the most
+``asof_join(left, right)`` attaches to every left row the most
 recent right row with the same key and timestamp <= the left timestamp —
 the time-series join (trades->quotes, events->latest-state).
 
@@ -30,29 +30,21 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    direction: str = "backward",
-) -> DataFrame:
+def asof_join(left: DataFrame, right: DataFrame, direction: str = "backward") -> DataFrame:
     """Left as-of join: every ``left`` row + the latest ``right`` row with
-    the same ``key`` and ``right_ts`` <= ``left_ts`` (nulls when none).
+    the same ``user_id`` and a ``ts`` <= the left ``ts`` (nulls when none).
 
     ``direction="forward"`` mirrors it: the EARLIEST right row with
-    ``right_ts`` >= ``left_ts`` — the next-event lookup (click -> next
+    ``ts`` >= the left ``ts`` — the next-event lookup (click -> next
     purchase, order -> next restock). Same single-shuffle union-merge
     plan; only the side tags and the window direction flip.
 
-    Right payload columns (everything except key/ts) come back prefixed
-    with ``right_prefix``; ``{right_prefix}{right_ts}`` is the matched
-    timestamp.
+    Right payload columns (everything except user_id/ts) come back
+    prefixed with ``r_``; ``r_ts`` is the matched timestamp.
     """
     if direction not in ("backward", "forward"):
         raise ValueError(f"asof_join direction must be backward/forward, got {direction!r}")
-    r_payload = [c for c in right.columns if c not in (key, right_ts)]
+    r_payload = [c for c in right.columns if c not in ("user_id", "ts")]
     l_cols = [c for c in left.columns]
 
     # at equal ts the right row must be inside the left row's window:
@@ -60,15 +52,15 @@ def asof_join(
     # look ahead, so right sorts last.
     r_side, l_side = (0, 1) if direction == "backward" else (1, 0)
     r_tagged = right.select(
-        F.col(key).alias("__k"),
-        F.col(right_ts).alias("__ts"),
+        F.col("user_id").alias("__k"),
+        F.col("ts").alias("__ts"),
         F.lit(r_side).alias("__side"),
-        F.struct(F.col(right_ts), *r_payload).alias("__rv"),
+        F.struct(F.col("ts"), *r_payload).alias("__rv"),
         *[F.lit(None).cast(left.schema[c].dataType).alias(f"__l_{c}") for c in l_cols],
     )
     l_tagged = left.select(
-        F.col(key).alias("__k"),
-        F.col(left_ts).alias("__ts"),
+        F.col("user_id").alias("__k"),
+        F.col("ts").alias("__ts"),
         F.lit(l_side).alias("__side"),
         F.lit(None).cast(r_tagged.schema["__rv"].dataType).alias("__rv"),
         *[F.col(c).alias(f"__l_{c}") for c in l_cols],
@@ -92,9 +84,7 @@ def asof_join(
         match = F.first("__rv", ignorenulls=True).over(w)
     carried = unioned.withColumn("__match", match)
     out_cols = [F.col(f"__l_{c}").alias(c) for c in l_cols]
-    out_cols.append(
-        F.col("__match").getField(right_ts).alias(f"r_{right_ts}")
-    )
+    out_cols.append(F.col("__match").getField("ts").alias("r_ts"))
     out_cols.extend(
         F.col("__match").getField(c).alias(f"r_{c}") for c in r_payload
     )

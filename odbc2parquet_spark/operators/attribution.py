@@ -34,15 +34,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: the event types shapley_attribution splits credit over
+_CHANNELS = ("click", "error", "signup", "view")
 
-def _touch_join(
-    c: DataFrame, touches: DataFrame, key: str, channel: F.Column, how: str
-) -> DataFrame:
+
+def _touch_join(c: DataFrame, touches: DataFrame, channel: F.Column, how: str) -> DataFrame:
     """Conversions ``c`` (keyed ``_k``, timed ``_cts``) joined to the
     ``channel`` of each touch of the same key in the 7 days up to the
     conversion: a bounded equi+range join, never a cross join."""
     t = touches.select(
-        F.col(key).alias("_k"),
+        F.col("user_id").alias("_k"),
         F.col("ts").alias("_tts"),
         channel,
     )
@@ -57,27 +58,26 @@ def _touch_join(
     )
 
 
-def linear_attribution(conversions: DataFrame, touches: DataFrame, key: str) -> DataFrame:
+def linear_attribution(conversions: DataFrame, touches: DataFrame) -> DataFrame:
     """Credit rows for the linear attribution model.
 
-    ``conversions`` needs (key, conv_id_col, ts_col, value_col);
-    ``touches`` needs (key, ts_col, channel_col). A touch participates if
-    it happened at or before the conversion and no earlier than
-    ``window`` before it. Conversions with zero in-window touches drop
-    out (nothing to credit — count them upstream if the funnel report
-    needs the orphan rate).
+    ``conversions`` needs (user_id, conv_id, ts, value); ``touches`` needs
+    (user_id, ts, channel). A touch participates if it happened at or before
+    the conversion and no earlier than 7 days before it. Conversions with
+    zero in-window touches drop out (nothing to credit — count them upstream
+    if the funnel report needs the orphan rate).
 
     Returns one row per (conversion, channel):
     ``conv_id, value, channel, n_channel, n_total, credit`` where
     ``credit`` is DECIMAL(25,12) and sums to ~value per conversion.
     """
     c = conversions.select(
-        F.col(key).alias("_k"),
+        F.col("user_id").alias("_k"),
         F.col("conv_id"),
         F.col("ts").alias("_cts"),
         F.col("value"),
     )
-    pairs = _touch_join(c, touches, key, F.col("channel"), "inner")
+    pairs = _touch_join(c, touches, F.col("channel"), "inner")
     per = pairs.groupBy("conv_id", "value", "channel").agg(
         F.count(F.lit(1)).alias("n_channel")
     )
@@ -91,13 +91,9 @@ def linear_attribution(conversions: DataFrame, touches: DataFrame, key: str) -> 
     )
 
 
-def shapley_attribution(
-    conversions: DataFrame,
-    touches: DataFrame,
-    key: str,
-    channels: list[str],
-) -> DataFrame:
-    """EXACT Shapley-value attribution over the channel coalition lattice.
+def shapley_attribution(conversions: DataFrame, touches: DataFrame) -> DataFrame:
+    """EXACT Shapley-value attribution over the lattice of coalitions of
+    the c = 4 ``_CHANNELS``.
 
     The game: v(T) = number of conversions whose in-window touched-channel
     set is contained in T (conversions "reachable" using only the
@@ -110,7 +106,7 @@ def shapley_attribution(
     changes reachability.
 
     Exactness: everything is integer. Per-conversion channel sets become
-    bitmasks (bit i = channels[i]); v() is a zeta transform (subset-sum)
+    bitmasks (bit i = ``_CHANNELS[i]``); v() is a zeta transform (subset-sum)
     over the 2^c-point lattice; the factorial weights are scaled by c! so
     every Shapley numerator is a BIGINT — the only division is the final
     presentation divide by c!.
@@ -119,8 +115,8 @@ def shapley_attribution(
     equi+range join as linear_attribution (never a cross join) and
     collapses map-side to one bitmask per conversion, then to <= 2^c mask
     counts. The lattice work (zeta transform, marginals) runs on 2^c
-    rows — constants like 16 — via explode over literal ranges, no join
-    wider than 2^c x 2^c with c <= ~8 by construction.
+    rows (16) via explode over literal ranges, no join
+    wider than 2^c x 2^c.
 
     Returns one row per channel: ``channel``, ``shapley_num`` (BIGINT,
     the Shapley value times c!), ``shapley_conversions`` (num / c!,
@@ -128,11 +124,11 @@ def shapley_attribution(
     """
     import math
 
-    c_n = len(channels)
+    c_n = len(_CHANNELS)
     full = (1 << c_n) - 1
     fact = math.factorial(c_n)
     idx_expr = "CASE " + " ".join(
-        f"WHEN _ch = '{ch}' THEN {i}" for i, ch in enumerate(channels)
+        f"WHEN _ch = '{ch}' THEN {i}" for i, ch in enumerate(_CHANNELS)
     ) + " END"
     w_expr = "CASE " + " ".join(
         f"WHEN bit_count(t_mask) = {s} "
@@ -141,11 +137,11 @@ def shapley_attribution(
     ) + " END"
 
     c = conversions.select(
-        F.col(key).alias("_k"),
+        F.col("user_id").alias("_k"),
         F.col("conv_id"),
         F.col("ts").alias("_cts"),
     )
-    pairs = _touch_join(c, touches, key, F.col("channel").alias("_ch"), "left")
+    pairs = _touch_join(c, touches, F.col("channel").alias("_ch"), "left")
     masks = pairs.groupBy("conv_id").agg(
         F.coalesce(
             F.expr(f"bit_or(shiftleft(1, {idx_expr}))"), F.lit(0)
@@ -186,7 +182,7 @@ def shapley_attribution(
         )
     )
     ch_expr = "CASE " + " ".join(
-        f"WHEN i = {i} THEN '{ch}'" for i, ch in enumerate(channels)
+        f"WHEN i = {i} THEN '{ch}'" for i, ch in enumerate(_CHANNELS)
     ) + " END"
     return (
         marg.groupBy("i")

@@ -10,7 +10,7 @@ spill at 100 TB.
 
 This helper removes the materialization requirement instead: bucket
 boundaries are collected ONCE (an approx-quantile pass that returns
-``num_buckets - 1`` doubles to the driver — never data) and embedded as
+31 doubles to the driver — never data) and embedded as
 LITERALS in the bucket expression, so every downstream plan recomputes
 the identical bucket for every row from the source scan. Monotone by
 construction: ``bucket(x) = #{boundaries <= x}``, so bucket b's rows all
@@ -29,13 +29,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def order_bucket_col(
-    df: DataFrame,
-    order_col: str,
-    num_buckets: int,
-    apply_col: str | None = None,
-) -> Column:
-    """A pure-expression bucket column, monotone in ``order_col``.
+def order_bucket_col(df: DataFrame, order_col: str, apply_col: str | None = None) -> Column:
+    """A pure-expression bucket column of 32 buckets, monotone in ``order_col``.
 
     ``apply_col`` lets the boundary SAMPLE come from a cheaper proxy than
     the frame the expression will run on: boundaries are estimated from
@@ -48,7 +43,7 @@ def order_bucket_col(
     recomputation of that pipeline for the quantile pass.
 
     Runs one ``approxQuantile`` job over the (cast-to-double) key —
-    Greenwald-Khanna, single pass, ``num_buckets - 1`` doubles to the
+    Greenwald-Khanna, single pass, 31 doubles to the
     driver — then returns ``#{boundaries <= key}`` as a chain of
     codegen-friendly comparisons on literal boundaries. NULL keys (which
     Spark ascending order sorts first) get bucket 0, matching their sort
@@ -78,13 +73,13 @@ def order_bucket_col(
 
     dt = df.schema[order_col].dataType
     if isinstance(dt, (NumericType, TimestampType, DateType, BooleanType)):
-        probs = [i / num_buckets for i in range(1, num_buckets)]
+        probs = [i / 32 for i in range(1, 32)]
         key = _as_double(F.col(order_col), dt)
         bnds = df.select(key.alias("_k_")).approxQuantile("_k_", probs, 0.01)
         uniq: list = sorted({b for b in bnds if b is not None})
         lits = [F.lit(float(v)) for v in uniq]
     else:
-        cap = max(num_buckets * 200, 2000)
+        cap = 6400
         key = F.col(order_col)
         keys = df.select(key.alias("_k_")).filter(F.col("_k_").isNotNull())
         sample = [
@@ -93,15 +88,10 @@ def order_bucket_col(
             .limit(cap)
             .collect()
         ]
-        if len(sample) < num_buckets * 8:  # small input: thinning too sparse
+        if len(sample) < 256:  # small input: thinning too sparse
             sample = [r._k_ for r in keys.limit(cap).collect()]
         sample.sort()
-        uniq = sorted(
-            {
-                sample[(len(sample) * i) // num_buckets]
-                for i in range(1, num_buckets)
-            }
-        ) if sample else []
+        uniq = sorted({sample[(len(sample) * i) // 32] for i in range(1, 32)}) if sample else []
         lits = [F.lit(v) for v in uniq]
     if apply_col is not None:
         key = F.col(apply_col)

@@ -72,13 +72,9 @@ def zorder_sql(cx: str, cy: str, bits: int, dialect: str = "spark") -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def zorder_key(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-) -> DataFrame:
-    """Append ``zkey``: the Morton interleave of the pair, each range-bucketed
-    into 10 bits.
+def zorder_key(df: DataFrame) -> DataFrame:
+    """Append ``zkey``: the Morton interleave of ``x`` and ``y``, each
+    range-bucketed into 10 bits.
 
     min/max for the bucketing are computed by one tiny aggregate and
     joined back as a broadcast (no driver round-trip in the plan).
@@ -93,13 +89,13 @@ def zorder_key(
     spreads the range across at least 2^10 units.
     """
     stats = df.agg(
-        F.min(x_col).alias("_mnx"),
-        F.max(x_col).alias("_mxx"),
-        F.min(y_col).alias("_mny"),
-        F.max(y_col).alias("_mxy"),
+        F.min("x").alias("_mnx"),
+        F.max("x").alias("_mxx"),
+        F.min("y").alias("_mny"),
+        F.max("y").alias("_mxy"),
     )
-    cx = cell_sql(x_col, "_mnx", "_mxx", 10)
-    cy = cell_sql(y_col, "_mny", "_mxy", 10)
+    cx = cell_sql("x", "_mnx", "_mxx", 10)
+    cy = cell_sql("y", "_mny", "_mxy", 10)
     z = zorder_sql(cx, cy, 10)
     return (
         df.crossJoin(F.broadcast(stats))
@@ -108,11 +104,7 @@ def zorder_key(
     )
 
 
-def zorder_bucket_stats(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-) -> DataFrame:
+def zorder_bucket_stats(df: DataFrame) -> DataFrame:
     """Clustering-quality certificate: split the 20-bit curve into 2^6
     consecutive runs and report each run's bounding rectangle.
 
@@ -120,15 +112,15 @@ def zorder_bucket_stats(
     the quantitative form of "min/max pruning now works on both columns".
     Emits (bucket, n_rows, x_min, x_max, y_min, y_max).
     """
-    keyed = zorder_key(df, x_col, y_col)
+    keyed = zorder_key(df)
     bucket = F.shiftright(F.col("zkey"), 14)
     return (
         keyed.groupBy(bucket.cast("long").alias("bucket"))
         .agg(
             F.count("*").cast("long").alias("n_rows"),
-            F.min(x_col).cast("long").alias("x_min"),
-            F.max(x_col).cast("long").alias("x_max"),
-            F.min(y_col).cast("long").alias("y_min"),
-            F.max(y_col).cast("long").alias("y_max"),
+            F.min("x").cast("long").alias("x_min"),
+            F.max("x").cast("long").alias("x_max"),
+            F.min("y").cast("long").alias("y_min"),
+            F.max("y").cast("long").alias("y_max"),
         )
     )

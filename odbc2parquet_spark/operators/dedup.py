@@ -75,12 +75,12 @@ def word_shingles(docs: DataFrame, spread: bool = False) -> DataFrame:
 # ------------------------------------------------------- n-gram Jaccard
 
 
-def jaccard_pairs(shingles: DataFrame, threshold: float) -> DataFrame:
+def jaccard_pairs(shingles: DataFrame) -> DataFrame:
     """All-pairs Jaccard over a (id, g) shingle set.
 
     Quadratic in documents-per-shared-shingle: use only on bounded inputs
     or LSH candidate neighborhoods. Returns (id_a, id_b, common, n_a, n_b)
-    filtered to jaccard >= threshold; the division is int/int -> double,
+    filtered to jaccard >= 0.5; the division is int/int -> double,
     bit-identical in any engine.
     """
     sizes = shingles.groupBy("id").agg(F.count("*").alias("n"))
@@ -97,7 +97,7 @@ def jaccard_pairs(shingles: DataFrame, threshold: float) -> DataFrame:
         inter.join(sa, "id_a")
         .join(sb, "id_b")
         .filter(
-            F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")) >= F.lit(threshold)
+            F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common")) >= F.lit(0.5)
         )
         .select("id_a", "id_b", "common", "n_a", "n_b")
     )
@@ -180,18 +180,18 @@ def lsh_candidate_pairs(signatures: DataFrame, max_bucket: int = 1000) -> DataFr
     return capped_bucket_pairs(melted, ["band", "key"], max_bucket, dedupe=True)
 
 
-def lsh_candidate_pairs_multi(
-    signatures: DataFrame,
-    configs: list[tuple[int, int]],
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """Candidate pairs for SEVERAL bandings of one signature in a single
-    shuffle: (cfg, id_a, id_b), cfg = "{bands}x{rows}" — exactly the
+#: the (bands, rows) bandings lsh_candidate_pairs_multi emits in one shuffle
+_MULTI_BANDINGS = [(8, 1), (4, 2), (2, 4), (1, 8)]
+
+
+def lsh_candidate_pairs_multi(signatures: DataFrame, max_bucket: int = 1000) -> DataFrame:
+    """Candidate pairs for the ``_MULTI_BANDINGS`` of one signature in a
+    single shuffle: (cfg, id_a, id_b), cfg = "{bands}x{rows}" — exactly the
     union of the per-config banded pairs (what :func:`lsh_candidate_pairs`
     emits for 4x2), which a loop would pay one signature evaluation and one
     shuffle per config for.
     """
-    keys = {f"{b}x{r}": _minhash_keys(b, r) for b, r in configs}
+    keys = {f"{b}x{r}": _minhash_keys(b, r) for b, r in _MULTI_BANDINGS}
     melted = band_melt(signatures, F.col("id"), keys)
     return (
         capped_bucket_pairs(melted, ["cfg", "band", "key"], max_bucket, keep_bucket=True)
@@ -341,28 +341,17 @@ def simhash_near_pairs(sig: DataFrame) -> DataFrame:
     )
 
 
-def simhash_banded_pairs(
-    sig: DataFrame,
-    max_hamming: int = 6,
-    bits: int = 32,
-    bands: int = 8,
-    max_bucket: int = 10000,
-) -> DataFrame:
+def simhash_banded_pairs(sig: DataFrame, bits: int = 32, max_bucket: int = 10000) -> DataFrame:
     """SimHash scale path: pigeonhole banding instead of all-pairs.
 
-    Split into ``bands`` > max_hamming contiguous slices, two signatures
-    within max_hamming bits agree on at least one slice, so
+    Split into 4 contiguous slices, more than the Hamming radius 3, two
+    signatures within 3 bits agree on at least one slice, so
     :func:`similarity.banded_hamming_pairs` finds EVERY pair within the
     radius (exact, not probabilistic) unless its only shared buckets
     hold more than ``max_bucket`` signatures and are dropped.
     """
-    if bands <= max_hamming:
-        raise ValueError(
-            f"bands={bands} must exceed max_hamming={max_hamming} for the "
-            "pigeonhole guarantee"
-        )
     return banded_hamming_pairs(
-        sig, "id", "simhash", bands, bits // bands, max_hamming, max_bucket
+        sig, "id", "simhash", 4, bits // 4, 3, max_bucket
     )
 
 

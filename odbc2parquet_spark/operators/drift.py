@@ -76,11 +76,9 @@ def prefix_sums(
     spark = df.sparkSession
     if boundary_source is not None:
         proxy_df, proxy_col = boundary_source
-        bucket = order_bucket_col(
-            proxy_df, proxy_col, 32, apply_col=order_cols[0]
-        )
+        bucket = order_bucket_col(proxy_df, proxy_col, apply_col=order_cols[0])
     else:
-        bucket = order_bucket_col(df, order_cols[0], 32)
+        bucket = order_bucket_col(df, order_cols[0])
     with_pid = df.withColumn("_pid_", bucket)
     offsets, grand = bucket_offsets(with_pid, sum_cols)
     if not offsets[sum_cols[0]]:
@@ -112,8 +110,8 @@ def prefix_sums(
     return out.drop("_pid_", *[f"_off_{c}_" for c in sum_cols])
 
 
-def psi_drift(df: DataFrame, value_col: str, in_b) -> DataFrame:
-    """Population Stability Index between two populations of ``value_col``
+def psi_drift(df: DataFrame, in_b) -> DataFrame:
+    """Population Stability Index between two populations of ``value``
     (rows where boolean column expression ``in_b`` holds are population B,
     the rest population A — e.g. this week's ingest vs the reference
     snapshot).
@@ -132,7 +130,7 @@ def psi_drift(df: DataFrame, value_col: str, in_b) -> DataFrame:
     exact decimal sum of the terms (see the registered query).
     """
     flagged = df.select(
-        F.col(value_col).alias("v"), in_b.cast("boolean").alias("_b_")
+        F.col("value").alias("v"), in_b.cast("boolean").alias("_b_")
     )
     stats = flagged.agg(
         F.min("v").alias("mn"),
@@ -191,9 +189,9 @@ def psi_drift(df: DataFrame, value_col: str, in_b) -> DataFrame:
     )
 
 
-def ks_two_sample(df: DataFrame, value_col: str, in_b) -> DataFrame:
+def ks_two_sample(df: DataFrame, in_b) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov statistic: D = max over x of
-    |F_a(x) - F_b(x)| between the two populations of ``value_col``.
+    |F_a(x) - F_b(x)| between the two populations of ``value``.
 
     The corpus collapses to one row per DISTINCT value first (map-side
     combined counts), so the prefix-sum stage shuffles the value
@@ -205,7 +203,7 @@ def ks_two_sample(df: DataFrame, value_col: str, in_b) -> DataFrame:
     Returns one row: (n_a, n_b, d_stat).
     """
     flagged = df.select(
-        F.col(value_col).alias("v"), in_b.cast("boolean").alias("_b_")
+        F.col("value").alias("v"), in_b.cast("boolean").alias("_b_")
     )
     per_value = flagged.groupBy("v").agg(
         F.sum(F.when(~F.col("_b_"), 1).otherwise(0)).cast("long").alias("na"),
@@ -218,7 +216,7 @@ def ks_two_sample(df: DataFrame, value_col: str, in_b) -> DataFrame:
         per_value,
         ["v"],
         ["na", "nb"],
-        boundary_source=(df.select(F.col(value_col).alias("_v_")), "_v_"),
+        boundary_source=(df.select(F.col("value").alias("_v_")), "_v_"),
         with_totals=True,
     )
     return (
@@ -238,8 +236,8 @@ def ks_two_sample(df: DataFrame, value_col: str, in_b) -> DataFrame:
     )
 
 
-def rank_auc(df: DataFrame, score_col: str, is_pos) -> DataFrame:
-    """ROC-AUC of ``score_col`` ranking the positive class (rows where
+def rank_auc(df: DataFrame, is_pos) -> DataFrame:
+    """ROC-AUC of ``value`` ranking the positive class (rows where
     ``is_pos`` holds) — the Mann-Whitney U statistic with exact
     average-rank tie handling, in pure integer arithmetic.
 
@@ -253,7 +251,7 @@ def rank_auc(df: DataFrame, score_col: str, is_pos) -> DataFrame:
     Returns one row: (n_pos, n_neg, auc).
     """
     flagged = df.select(
-        F.col(score_col).alias("s"), is_pos.cast("boolean").alias("_p_")
+        F.col("value").alias("s"), is_pos.cast("boolean").alias("_p_")
     )
     per_score = flagged.groupBy("s").agg(
         F.sum(F.when(F.col("_p_"), 1).otherwise(0)).cast("long").alias("np"),
@@ -263,7 +261,7 @@ def rank_auc(df: DataFrame, score_col: str, is_pos) -> DataFrame:
         per_score,
         ["s"],
         ["nn"],
-        boundary_source=(df.select(F.col(score_col).alias("_s_")), "_s_"),
+        boundary_source=(df.select(F.col("value").alias("_s_")), "_s_"),
     )
     u2 = cum.agg(
         F.sum(
@@ -285,8 +283,8 @@ def rank_auc(df: DataFrame, score_col: str, is_pos) -> DataFrame:
     )
 
 
-def gini_concentration(df: DataFrame, value_col: str) -> DataFrame:
-    """Gini coefficient of the ``value_col`` distribution (one row per
+def gini_concentration(df: DataFrame) -> DataFrame:
+    """Gini coefficient of the ``v`` distribution (one row per
     unit, e.g. revenue per supplier) — the inequality/concentration
     number behind "the top 1% of domains contribute 60% of tokens".
 
@@ -298,11 +296,11 @@ def gini_concentration(df: DataFrame, value_col: str) -> DataFrame:
     positions come from ``prefix_sums`` (no global window); the final
     division is the only float step, rounded to 6.
 
-    ``value_col`` must be a decimal/integer type for exactness.
+    ``v`` must be a decimal/integer type for exactness.
 
     Returns one row: (n, total, gini).
     """
-    per_value = df.groupBy(F.col(value_col).alias("v")).agg(
+    per_value = df.groupBy(F.col("v")).agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )
     # n rides the offsets fold (with_totals); Σx folds into the SAME final
@@ -312,7 +310,7 @@ def gini_concentration(df: DataFrame, value_col: str) -> DataFrame:
         per_value,
         ["v"],
         ["c"],
-        boundary_source=(df.select(F.col(value_col).alias("_v_")), "_v_"),
+        boundary_source=(df.select(F.col("v").alias("_v_")), "_v_"),
         with_totals=True,
     )
     contrib = cum.select(
@@ -372,9 +370,9 @@ def _cov_project(sxy_df, sums):
     )
 
 
-def covariance_matrix(vectors: DataFrame, dim: int = 16) -> DataFrame:
-    """Upper-triangle covariance matrix of an embedding column — the
-    embedding-space drift statistic (compare against the snapshot's
+def covariance_matrix(vectors: DataFrame) -> DataFrame:
+    """Upper-triangle covariance matrix of the 64-wide ``embedding``
+    column — the embedding-space drift statistic (compare against the snapshot's
     matrix to detect encoder or corpus shift; feeds whitening/PCA).
 
     Scale shape: an Arrow-batched numpy partial-Gram pass (mapInPandas —
@@ -401,11 +399,11 @@ def covariance_matrix(vectors: DataFrame, dim: int = 16) -> DataFrame:
 
     Returns one row per (i, j) with i <= j: (i, j, n, cov).
     """
-    sxy_df, sums = _gram_partials(vectors, dim)
+    sxy_df, sums = _gram_partials(vectors)
     return _cov_project(sxy_df, sums)
 
 
-def _gram_partials(vectors: DataFrame, dim: int):
+def _gram_partials(vectors: DataFrame):
     """The shared Arrow-batched integer Gram pass behind
     :func:`covariance_matrix` and :func:`correlation_matrix`: per-batch
     exact int64 Xᵀ·X + per-dim sums (d(d+1)/2 + d rows per BATCH), merged
@@ -414,7 +412,7 @@ def _gram_partials(vectors: DataFrame, dim: int):
     import pandas as pd
 
     def gram_batches(batches):
-        iu = np.triu_indices(dim)
+        iu = np.triu_indices(64)
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -450,7 +448,7 @@ def _gram_partials(vectors: DataFrame, dim: int):
                 )
                 dsum = pd.DataFrame(
                     {
-                        "i": np.arange(dim, dtype=np.int32),
+                        "i": np.arange(64, dtype=np.int32),
                         "j": np.int32(-1),
                         "sxy": Xc.sum(axis=0),
                         "n": np.int64(n),
@@ -477,8 +475,9 @@ def _gram_partials(vectors: DataFrame, dim: int):
     return sxy_df, sums
 
 
-def correlation_matrix(vectors: DataFrame, dim: int = 16) -> DataFrame:
-    """Upper-triangle Pearson correlation matrix of an embedding column —
+def correlation_matrix(vectors: DataFrame) -> DataFrame:
+    """Upper-triangle Pearson correlation matrix of the 64-wide
+    ``embedding`` column —
     the scale-free twin of :func:`covariance_matrix` (feature-redundancy
     audit: highly correlated dimensions signal a collapsed encoder or a
     copied feature; the drift comparison that survives re-normalization).
@@ -494,7 +493,7 @@ def correlation_matrix(vectors: DataFrame, dim: int = 16) -> DataFrame:
 
     Returns one row per (i, j) with i <= j: (i, j, n, corr).
     """
-    sxy_df, sums = _gram_partials(vectors, dim)
+    sxy_df, sums = _gram_partials(vectors)
     nd = F.col("n").cast("double")
 
     def var_term(sxy, sx):
@@ -536,14 +535,10 @@ def correlation_matrix(vectors: DataFrame, dim: int = 16) -> DataFrame:
     )
 
 
-def cusum_changepoint(
-    df: DataFrame,
-    ts_col: str,
-    value_col: str,
-    group_col: str,
-) -> DataFrame:
-    """CUSUM changepoint detection per group: the day t maximizing
-    |Σ_{i<=t}(x_i - mean)| over the group's daily totals — the standard
+def cusum_changepoint(df: DataFrame) -> DataFrame:
+    """CUSUM changepoint detection per ``event_type``: the day t maximizing
+    |Σ_{i<=t}(x_i - mean)| over the group's daily ``value`` totals
+    (days of ``ts``) — the standard
     "when did this metric's level shift?" statistic a monitoring layer
     runs per source/event-type between snapshots.
 
@@ -560,11 +555,11 @@ def cusum_changepoint(
 
     Returns one row per group: (group, n_days, change_day, d_stat).
     """
-    g = F.col(group_col)
+    g = F.col("event_type")
     daily = (
-        df.groupBy(g.alias("g"), F.to_date(F.col(ts_col)).alias("day"))
+        df.groupBy(g.alias("g"), F.to_date(F.col("ts")).alias("day"))
         .agg(
-            F.sum(F.round(F.col(value_col), 6).cast("decimal(18,6)")).alias("x")
+            F.sum(F.round(F.col("value"), 6).cast("decimal(18,6)")).alias("x")
         )
         .select("g", "day", (F.col("x") * 1000000).cast("long").alias("x6"))
     )
@@ -587,7 +582,7 @@ def cusum_changepoint(
         scored.withColumn("rk", F.row_number().over(wr))
         .filter(F.col("rk") == 1)
         .select(
-            F.col("g").alias(group_col),
+            F.col("g").alias("event_type"),
             "n_days",
             F.col("day").alias("change_day"),
             F.round(
@@ -653,14 +648,11 @@ def covariance_matrix_decimal(vectors: DataFrame, dim: int = 16) -> DataFrame:
     return _cov_project(sxy_df, sums)
 
 
-def chi_square_independence(
-    df: DataFrame,
-    col_a: str,
-    col_b: str,
-) -> DataFrame:
-    """Pearson chi-square test of independence between two categorical
-    columns — "is label distribution independent of source?", the
-    stratification audit for mixture sampling.
+def chi_square_independence(df: DataFrame) -> DataFrame:
+    """Pearson chi-square test of independence between the categorical
+    columns ``o_orderpriority`` and ``o_orderstatus`` — "is label
+    distribution independent of source?", the stratification audit for
+    mixture sampling.
 
     Shape: ONE groupBy(a, b) over the corpus (map-side combined) yields
     the contingency table; marginals re-aggregate the table itself
@@ -674,7 +666,7 @@ def chi_square_independence(
     Returns one row: (n, levels_a, levels_b, dof, chi2).
     """
     obs = df.groupBy(
-        F.col(col_a).alias("a"), F.col(col_b).alias("b")
+        F.col("o_orderpriority").alias("a"), F.col("o_orderstatus").alias("b")
     ).agg(F.count(F.lit(1)).cast("long").alias("o"))
     row_tot = obs.groupBy("a").agg(F.sum("o").cast("long").alias("rt"))
     col_tot = obs.groupBy("b").agg(F.sum("o").cast("long").alias("ct"))
@@ -714,11 +706,11 @@ def chi_square_independence(
     )
 
 
-def weighted_median(df: DataFrame, value_col: str, weight_col: str) -> DataFrame:
-    """Global weighted (lower) median: the smallest value v whose
-    inclusive cumulative weight reaches half the total — the robust
-    center of a weighted distribution (quality-weighted corpus length,
-    quantity-weighted price) that a plain percentile can't express.
+def weighted_median(df: DataFrame) -> DataFrame:
+    """Global weighted (lower) median: the smallest ``l_extendedprice`` v
+    whose inclusive cumulative ``l_quantity`` weight reaches half the total
+    — the robust center of a weighted distribution (quality-weighted corpus
+    length, quantity-weighted price) that a plain percentile can't express.
 
     Scale shape: values first collapse to (value, total-weight) rows
     (one groupBy — cardinality is DISTINCT values, not rows), the
@@ -729,8 +721,8 @@ def weighted_median(df: DataFrame, value_col: str, weight_col: str) -> DataFrame
 
     Returns one row: (wmedian, w_total, n_distinct).
     """
-    agg = df.groupBy(F.col(value_col).alias("v")).agg(
-        F.sum(F.col(weight_col).cast("long")).alias("w")
+    agg = df.groupBy(F.col("l_extendedprice").alias("v")).agg(
+        F.sum(F.col("l_quantity").cast("long")).alias("w")
     ).withColumn("_one_", F.lit(1).cast("long"))
     # proxy boundaries from the raw value column + totals from the offsets
     # fold (grand weight AND distinct count both ride the prefix pass), so
@@ -739,7 +731,7 @@ def weighted_median(df: DataFrame, value_col: str, weight_col: str) -> DataFrame
         agg,
         ["v"],
         ["w", "_one_"],
-        boundary_source=(df.select(F.col(value_col).alias("_v_")), "_v_"),
+        boundary_source=(df.select(F.col("l_extendedprice").alias("_v_")), "_v_"),
         with_totals=True,
     )
     return (
@@ -860,24 +852,20 @@ def embedding_centroid_shift(a: DataFrame, b: DataFrame) -> DataFrame:
     return per_dim.unionAll(summary)
 
 
-def _daily_counts(events: DataFrame, ts_col: str, group_col: str) -> DataFrame:
-    """(g, day, c): events per group and calendar day, the series
-    :func:`acf_daily` and :func:`theil_sen_daily` start from."""
+def _daily_counts(events: DataFrame) -> DataFrame:
+    """(g, day, c): events per ``event_type`` and calendar day of ``ts``,
+    the series :func:`acf_daily` and :func:`theil_sen_daily` start from."""
     return events.groupBy(
-        F.col(group_col).alias("g"), F.to_date(ts_col).alias("day")
+        F.col("event_type").alias("g"), F.to_date("ts").alias("day")
     ).agg(F.count("*").alias("c"))
 
 
-def acf_daily(
-    events: DataFrame,
-    ts_col: str,
-    group_col: str,
-) -> DataFrame:
-    """(group, lag, n_days, acf6): autocorrelation of the daily event-count
-    series at lags 1..7 — the seasonality detector a monitoring
-    pipeline runs BEFORE choosing a seasonal window (a strong lag-7 spike
-    says "weekly rhythm; deseasonalize with period 7", a flat tail says
-    the series is noise and STL would overfit).
+def acf_daily(events: DataFrame) -> DataFrame:
+    """(g, lag, n_days, acf6): autocorrelation of each ``event_type``'s
+    daily event-count series at lags 1..7 — the seasonality detector a
+    monitoring pipeline runs BEFORE choosing a seasonal window (a strong
+    lag-7 spike says "weekly rhythm; deseasonalize with period 7", a flat
+    tail says the series is noise and STL would overfit).
 
     Exactness: with n days, total T and daily count c_t, every mean-
     centered term is scaled by n — num_k = sum (n*c_t - T)(n*c_{t-k} - T)
@@ -891,7 +879,7 @@ def acf_daily(
     everything after runs on calendar-sized frames (per-group lag window
     + one aggregation), so cost rides the scan regardless of data size.
     """
-    daily = _daily_counts(events, ts_col, group_col)
+    daily = _daily_counts(events)
     tot = daily.groupBy("g").agg(
         F.count("*").alias("n_days"), F.sum("c").alias("t")
     )
@@ -938,15 +926,11 @@ def acf_daily(
     )
 
 
-def theil_sen_daily(
-    events: DataFrame,
-    ts_col: str,
-    group_col: str,
-) -> DataFrame:
-    """(group, n_days, n_pairs, slope_med): Theil-Sen robust trend of the
-    daily event-count series — the slope estimator that survives the
-    outlier days (deploy spikes, backfill dumps) that wreck an OLS fit;
-    the standard robust "is this metric growing?" answer.
+def theil_sen_daily(events: DataFrame) -> DataFrame:
+    """(g, n_days, n_pairs, slope_med): Theil-Sen robust trend of each
+    ``event_type``'s daily event-count series — the slope estimator that
+    survives the outlier days (deploy spikes, backfill dumps) that wreck an
+    OLS fit; the standard robust "is this metric growing?" answer.
 
     The estimator is the MEDIAN of all pairwise slopes (c_j - c_i) /
     (j - i) over day indexes i < j. Each slope is ONE IEEE division of
@@ -959,7 +943,7 @@ def theil_sen_daily(
     decade of days is ~6.7M pairs), independent of corpus row count. The
     rank pick is a per-group window over those bounded pairs.
     """
-    daily = _daily_counts(events, ts_col, group_col)
+    daily = _daily_counts(events)
     t = daily.select(
         "g",
         "c",
@@ -1027,7 +1011,7 @@ def pca_top_component(vectors: DataFrame) -> DataFrame:
     import decimal
     import math
 
-    cov_rows = covariance_matrix(vectors, dim=64).collect()
+    cov_rows = covariance_matrix(vectors).collect()
     spark = vectors.sparkSession
     schema = "i LONG, pc1_milli LONG, lambda6 DOUBLE"
     if not cov_rows:

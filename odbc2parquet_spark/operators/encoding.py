@@ -26,21 +26,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def target_encode_loo(
-    df: DataFrame,
-    cat_col: str,
-    target_col: str,
-) -> DataFrame:
-    """Adds ``enc_loo`` to ``df``: the smoothed leave-one-out target
-    encoding (sum_cat - x + w * global_mean) / (n_cat - 1 + w), prior
-    weight w = 20.
+def target_encode_loo(df: DataFrame) -> DataFrame:
+    """Adds ``enc_loo`` to ``df``: the smoothed leave-one-out encoding of
+    target ``o_totalprice`` per ``o_orderpriority`` (sum_cat - x + w *
+    global_mean) / (n_cat - 1 + w), prior weight w = 20.
 
     Categories with a single row fall back to the prior alone (the
     numerator keeps only the global-mean term; denominator is w), which
     the formula already yields — no special case.
     """
-    dec = F.col(target_col).cast("decimal(18,6)")
-    cat_stats = df.groupBy(cat_col).agg(
+    dec = F.col("o_totalprice").cast("decimal(18,6)")
+    cat_stats = df.groupBy("o_orderpriority").agg(
         F.sum(dec).alias("_s_cat_"), F.count("*").alias("_n_cat_")
     )
     glob = df.agg(F.sum(dec).alias("_gs_"), F.count("*").alias("_gn_"))
@@ -49,7 +45,7 @@ def target_encode_loo(
         + F.lit(20.0) * (F.col("_gs_").cast("double") / F.col("_gn_"))
     ) / (F.col("_n_cat_") - 1 + F.lit(20.0))
     return (
-        df.join(F.broadcast(cat_stats), cat_col)
+        df.join(F.broadcast(cat_stats), "o_orderpriority")
         .crossJoin(F.broadcast(glob))
         .withColumn("enc_loo", F.round(enc, 6))
         .drop("_s_cat_", "_n_cat_", "_gs_", "_gn_")

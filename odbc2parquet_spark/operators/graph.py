@@ -538,12 +538,12 @@ def _degrees(e: DataFrame) -> DataFrame:
     )
 
 
-def k_core(edges: DataFrame, k: int) -> DataFrame:
-    """Nodes of the k-core: the maximal subgraph where every node keeps
-    degree >= k — the dense-subgraph miner behind collusion/spam-farm
+def k_core(edges: DataFrame) -> DataFrame:
+    """Nodes of the 6-core: the maximal subgraph where every node keeps
+    degree >= 6 — the dense-subgraph miner behind collusion/spam-farm
     detection (a review ring or engagement farm survives peeling; organic
     long-tail activity does not). Batagelj-Zaversnik peeling, distributed:
-    each round drops nodes with degree < k and the edges touching them,
+    each round drops nodes with degree < 6 and the edges touching them,
     until a fixpoint. Rounds are peel DEPTH (shallow for real graphs),
     bounded by 50.
 
@@ -557,7 +557,7 @@ def k_core(edges: DataFrame, k: int) -> DataFrame:
     """
 
     def step(cur: DataFrame) -> DataFrame:
-        keep = _degrees(cur).filter(F.col("degree") >= k).select("node")
+        keep = _degrees(cur).filter(F.col("degree") >= 6).select("node")
         return (
             cur.join(keep.withColumnRenamed("node", "id_a"), "id_a", "left_semi")
             .join(keep.withColumnRenamed("node", "id_b"), "id_b", "left_semi")

@@ -25,27 +25,22 @@ from odbc2parquet_spark.functions.hashing import md5_pair
 from odbc2parquet_spark.operators.similarity import cap_buckets
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    distribute_by: str | None = None,
-) -> DataFrame:
-    """Inner equi-join with the big side's hot keys spread across 16 buckets.
+def salted_join(big: DataFrame, small: DataFrame) -> DataFrame:
+    """Inner equi-join on ``event_type`` with the big side's hot keys
+    spread across 16 buckets.
 
-    The big side gets a deterministic salt from ``distribute_by`` (a
-    high-cardinality column; defaults to a hash of the whole row) so one
-    join key lands in 16 different reducers; the small side, a lookup
-    table, is replicated once per salt value (explode of a 16-element
-    array — rows x 16, fine for dimension-sized inputs). Result equals
-    ``big.join(small, key)`` exactly.
+    The big side gets a deterministic salt from ``event_id`` (a
+    high-cardinality column) so one join key lands in 16 different
+    reducers; the small side, a lookup table, is replicated once per salt
+    value (explode of a 16-element array — rows x 16, fine for
+    dimension-sized inputs). Result equals
+    ``big.join(small, "event_type")`` exactly.
     """
-    dist = F.col(distribute_by) if distribute_by else F.hash(*[F.col(c) for c in big.columns])
-    b = big.withColumn("__salt", F.pmod(F.hash(dist), F.lit(16)))
+    b = big.withColumn("__salt", F.pmod(F.hash(F.col("event_id")), F.lit(16)))
     s = small.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(16)]))
     )
-    return b.join(s, [key, "__salt"]).drop("__salt")
+    return b.join(s, ["event_type", "__salt"]).drop("__salt")
 
 
 def _argmin_match(scored: DataFrame) -> DataFrame:
@@ -87,18 +82,13 @@ def _argmin_match(scored: DataFrame) -> DataFrame:
 def deletion_blocked_fuzzy_match(
     probes: DataFrame,
     master: DataFrame,
-    token_col: str,
-    text_col: str,
-    probe_id: str,
-    master_id: str,
-    token_len: int,
-    block_col: str | None = None,
     max_block: int | None = 50,
 ) -> DataFrame:
     """Entity resolution with DELETION-NEIGHBORHOOD blocking: each record
-    emits ``token_len`` block keys — its identifying token with one
-    character position removed — so a record with a single-character typo
-    in the token still shares a key with its master, and each block holds
+    (``c_custkey``, ``c_name``) emits 9 block keys — its 9-character
+    identifying token ``tok`` with one character position removed — so a
+    record with a single-character typo in the token still shares a key
+    with its master, and each block holds
     at most |alphabet| candidates NO MATTER how large the table grows
     (two records share the key for position i iff they agree on every
     other token character, so a block is one token-neighborhood, not a
@@ -109,27 +99,22 @@ def deletion_blocked_fuzzy_match(
     Candidate pairs from ANY shared key are deduplicated, scored with
     full-text Levenshtein, and reduced to a per-probe argmin via the
     packed-long hash aggregate (:func:`_argmin_match`) — map-side
-    partials, so the exchange carries one row per probe. ``block_col`` optionally
-    prefixes keys with a coarse partition (tenant, nation) purely for key
-    namespacing; ``max_block`` is a backstop cap on master rows per key
-    (cannot trigger for single-typo neighborhoods over a digit alphabet,
-    where blocks are <= 10, but guards degenerate token distributions).
+    partials, so the exchange carries one row per probe. ``c_nationkey``
+    prefixes the keys purely for key namespacing; ``max_block`` is a
+    backstop cap on master rows per key (cannot trigger for single-typo
+    neighborhoods over a digit alphabet, where blocks are <= 10, but
+    guards degenerate token distributions).
 
     Returns (probe_id, matched_id, distance).
     """
 
-    def keyed(df: DataFrame, id_col: str, out_id: str, out_text: str) -> DataFrame:
-        prefix = (
-            F.concat(F.col(block_col).cast("string"), F.lit(":"))
-            if block_col is not None
-            else F.lit("")
-        )
+    def keyed(df: DataFrame, out_id: str, out_text: str) -> DataFrame:
         return df.select(
-            F.col(id_col).alias(out_id),
-            F.col(text_col).alias(out_text),
-            F.explode(F.sequence(F.lit(0), F.lit(token_len - 1))).alias("pos"),
-            F.col(token_col).alias("tok"),
-            prefix.alias("pfx"),
+            F.col("c_custkey").alias(out_id),
+            F.col("c_name").alias(out_text),
+            F.explode(F.sequence(F.lit(0), F.lit(8))).alias("pos"),
+            F.col("tok"),
+            F.concat(F.col("c_nationkey").cast("string"), F.lit(":")).alias("pfx"),
         ).select(
             out_id,
             out_text,
@@ -141,8 +126,8 @@ def deletion_blocked_fuzzy_match(
             ).alias("bkey"),
         )
 
-    pk = keyed(probes, probe_id, "probe_id", "ptext")
-    mk = keyed(master, master_id, "matched_id", "mtext")
+    pk = keyed(probes, "probe_id", "ptext")
+    mk = keyed(master, "matched_id", "mtext")
     if max_block is not None:
         mk = cap_buckets(mk, ["bkey"], max_block)
     pairs = pk.join(mk, "bkey").select(
@@ -153,10 +138,10 @@ def deletion_blocked_fuzzy_match(
     )
 
 
-def skew_profile(df: DataFrame, key_col: str) -> DataFrame:
-    """Shuffle-skew diagnostic for a prospective join/groupBy key: the
-    5 hottest keys with their share of all rows and the salt
-    factor that would re-balance each across 32 reducers.
+def skew_profile(df: DataFrame) -> DataFrame:
+    """Shuffle-skew diagnostic for ``user_id`` as a prospective
+    join/groupBy key: the 5 hottest keys with their share of all rows and
+    the salt factor that would re-balance each across 32 reducers.
 
     At 100 TB the first question before any keyed operation is "which keys
     melt a reducer"; this answers it with one map-side-combined count and
@@ -172,7 +157,7 @@ def skew_profile(df: DataFrame, key_col: str) -> DataFrame:
     non-numeric hot key and collapse the diagnostic; tiebreak ordering
     still happens on the native key type before the cast.
     """
-    counts = df.groupBy(F.col(key_col).alias("key")).agg(
+    counts = df.groupBy(F.col("user_id").alias("key")).agg(
         F.count("*").alias("cnt")
     )
     stats = counts.agg(
@@ -200,14 +185,10 @@ def skew_profile(df: DataFrame, key_col: str) -> DataFrame:
     )
 
 
-def bloom_semi_join(
-    big: DataFrame,
-    small: DataFrame,
-    big_key: str,
-    small_key: str,
-) -> DataFrame:
-    """Semi-join with a Bloom runtime filter: build a compact bitset from
-    the small side's keys, pre-filter the big side AT THE SCAN (broadcast
+def bloom_semi_join(big: DataFrame, small: DataFrame) -> DataFrame:
+    """Semi-join of ``big.o_custkey`` on ``small.c_custkey`` with a Bloom
+    runtime filter: build a compact bitset from the small side's keys,
+    pre-filter the big side AT THE SCAN (broadcast
     bitset words, no shuffle), then the exact semi-join removes the Bloom
     false positives. Result is EXACTLY ``big`` semi-join ``small`` — the
     Bloom stage only changes how many big-side rows survive to the real
@@ -227,7 +208,7 @@ def bloom_semi_join(
         return [(h1 + F.lit(j) * h2) % 4096 for j in range(3)]
 
     bloom = (
-        small.select(F.explode(F.array(*positions(F.col(small_key)))).alias("p"))
+        small.select(F.explode(F.array(*positions(F.col("c_custkey")))).alias("p"))
         .select(
             (F.col("p") / 32).cast("long").alias("word"),
             F.expr("shiftleft(1L, cast(p % 32 as int))").alias("b"),
@@ -241,7 +222,7 @@ def bloom_semi_join(
     # join it was saving); this shape adds zero exchanges to the big side
     probe = big
     conds = []
-    for j, pos in enumerate(positions(F.col(big_key))):
+    for j, pos in enumerate(positions(F.col("o_custkey"))):
         bj = bloom.withColumnsRenamed({"word": f"_w{j}", "bits": f"_bits{j}"})
         probe = probe.withColumn(f"_p{j}", pos).join(
             F.broadcast(bj),
@@ -258,5 +239,5 @@ def bloom_semi_join(
     for c in conds[1:]:
         all_set = all_set & c
     hit = probe.filter(all_set).select(*big.columns)
-    keys = small.select(F.col(small_key).alias(big_key)).distinct()
-    return hit.join(keys, big_key, "left_semi")
+    keys = small.select(F.col("c_custkey").alias("o_custkey")).distinct()
+    return hit.join(keys, "o_custkey", "left_semi")

@@ -1028,10 +1028,10 @@ def video_keyframes(binary_df: DataFrame) -> DataFrame:
     )
 
 
-def _frame_energies(v: np.ndarray, n: int) -> list[int]:
-    """Exact int64 sum of squares of each ``n``-sample frame of ``v``;
+def _frame_energies(v: np.ndarray) -> list[int]:
+    """Exact int64 sum of squares of each 64-sample frame of ``v``;
     the last frame may be partial."""
-    return np.add.reduceat(v * v, np.arange(0, len(v), n)).tolist() if len(v) else []
+    return np.add.reduceat(v * v, np.arange(0, len(v), 64)).tolist() if len(v) else []
 
 
 ENERGY_SHINGLE_SCHEMA = "doc_id long, g string"
@@ -1052,7 +1052,7 @@ def audio_energy_shingles(binary_df: DataFrame) -> DataFrame:
 
     def rows(doc_id, p: bytes) -> list[tuple]:
         out = []
-        for widx, energy in enumerate(_frame_energies(_pcm16(p), 64)):
+        for widx, energy in enumerate(_frame_energies(_pcm16(p))):
             b = (energy + 1).bit_length()
             out.append((doc_id, f"{widx}:{b}:{(energy + 1) >> max(b - 6, 0)}"))
         return out
@@ -1077,7 +1077,7 @@ def decode_audio_frame_energy(binary_df: DataFrame) -> DataFrame:
         v = _pcm16(p)
         return [
             (doc_id, f, min(64, len(v) - f * 64), energy)
-            for f, energy in enumerate(_frame_energies(v, 64))
+            for f, energy in enumerate(_frame_energies(v))
         ]
 
     return _map_payloads(binary_df, AUDIO_FRAME_SCHEMA, rows, drop_corrupt=True)

@@ -10,7 +10,7 @@ LLM-context builders read without a join at serve time.
 Scale shape: ONE shuffle on the parent key (the same exchange the
 equivalent join would pay), map-side partial collect_list, deterministic
 child order via array_sort (lexicographic on the struct fields, leading
-with the caller's order columns) — no window, no driver involvement.
+with the line number) — no window, no driver involvement.
 Skew caution: a parent with millions of children materializes one giant
 array row; cap or bucket such parents upstream (same hot-key discipline
 as the LSH buckets).
@@ -22,18 +22,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def nest_children(
-    children: DataFrame,
-    parent_key: str,
-    child_cols: list[str],
-    nested_col: str = "children",
-) -> DataFrame:
-    """One row per ``parent_key`` with ``child_cols`` packed as a sorted
-    ``array<struct>`` column ``nested_col``. Child order is the
-    lexicographic struct order of ``child_cols`` — put the ordering
-    columns first; deterministic regardless of partitioning."""
-    packed = F.struct(*[F.col(c) for c in child_cols])
+def nest_children(children: DataFrame) -> DataFrame:
+    """One row per ``l_orderkey`` with its line items packed as a sorted
+    ``array<struct<l_linenumber, l_partkey, l_suppkey>>`` column
+    ``lines``. Child order is the lexicographic struct order, led by
+    ``l_linenumber``; deterministic regardless of partitioning."""
+    packed = F.struct("l_linenumber", "l_partkey", "l_suppkey")
     return (
-        children.groupBy(parent_key)
-        .agg(F.array_sort(F.collect_list(packed)).alias(nested_col))
+        children.groupBy("l_orderkey")
+        .agg(F.array_sort(F.collect_list(packed)).alias("lines"))
     )

@@ -24,6 +24,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: the quasi-identifier pair the privacy audits group customers by
+_QUASI_COLS = ["c_nationkey", "c_mktsegment"]
+
 
 @dataclass(frozen=True)
 class Rule:
@@ -36,24 +39,17 @@ class Rule:
     ref_col: str | None = None     # ref_integrity
 
 
-def not_null(column: str) -> Rule:
-    return Rule("not_null", column)
-
-
 def in_range(column: str, lo: float, hi: float) -> Rule:
     return Rule("in_range", column, lo=lo, hi=hi)
-
-
-def matches(column: str, pattern: str) -> Rule:
-    return Rule("matches", column, pattern=pattern)
 
 
 def unique(*columns: str) -> Rule:
     return Rule("unique", ",".join(columns))
 
 
-def ref_integrity(column: str, ref: DataFrame, ref_col: str) -> Rule:
-    return Rule("ref_integrity", column, ref=ref, ref_col=ref_col)
+def ref_integrity(ref: DataFrame) -> Rule:
+    """Every ``l_orderkey`` is an ``o_orderkey`` of ``ref``."""
+    return Rule("ref_integrity", "l_orderkey", ref=ref, ref_col="o_orderkey")
 
 
 def dq_check(df: DataFrame, rules: list[Rule]) -> DataFrame:
@@ -150,9 +146,9 @@ def dq_check(df: DataFrame, rules: list[Rule]) -> DataFrame:
     return out.withColumn("pass_", F.col("n_violations") == 0)
 
 
-def winsorize(df: DataFrame, value_col: str, group_col: str) -> DataFrame:
-    """Per-group robust outlier clipping: value clamped to that group's
-    exact [5%, 95%] percentile band (winsorization — the standard
+def winsorize(df: DataFrame) -> DataFrame:
+    """Per-``event_type`` robust outlier clipping: ``value`` clamped to that
+    group's exact [5%, 95%] percentile band (winsorization — the standard
     heavy-tail taming step before scaling/averaging a feature).
 
     Two passes over the data, both linear: one groupBy computing the
@@ -164,57 +160,47 @@ def winsorize(df: DataFrame, value_col: str, group_col: str) -> DataFrame:
     decimals so both engines clamp against identical thresholds
     (Spark `percentile` == DuckDB `quantile_cont`).
 
-    Adds columns ``p_lo``, ``p_hi``, ``<value_col>_w`` (clipped value).
+    Adds columns ``p_lo``, ``p_hi``, ``value_w`` (clipped value).
     """
-    stats = df.groupBy(group_col).agg(
-        F.round(F.expr(f"percentile({value_col}, 0.05)"), 6).alias("p_lo"),
-        F.round(F.expr(f"percentile({value_col}, 0.95)"), 6).alias("p_hi"),
+    stats = df.groupBy("event_type").agg(
+        F.round(F.expr("percentile(value, 0.05)"), 6).alias("p_lo"),
+        F.round(F.expr("percentile(value, 0.95)"), 6).alias("p_hi"),
     )
-    v = F.col(value_col)
-    return df.join(F.broadcast(stats), group_col).withColumn(
-        f"{value_col}_w", F.least(F.greatest(v, F.col("p_lo")), F.col("p_hi"))
+    v = F.col("value")
+    return df.join(F.broadcast(stats), "event_type").withColumn(
+        "value_w", F.least(F.greatest(v, F.col("p_lo")), F.col("p_hi"))
     )
 
 
-def k_anonymity_audit(
-    df: DataFrame, quasi_cols: list[str], k: int
-) -> DataFrame:
-    """Privacy audit: quasi-identifier combinations shared by fewer than
-    ``k`` rows — the groups where an individual is re-identifiable by
-    joining on those columns alone. Returns one row per at-risk group
-    (the quasi values + its count); an empty result certifies the table
-    k-anonymous over ``quasi_cols``.
+def k_anonymity_audit(df: DataFrame) -> DataFrame:
+    """Privacy audit: quasi-identifier (``_QUASI_COLS``) combinations
+    shared by fewer than 8 rows — the groups where an individual is
+    re-identifiable by joining on those columns alone. Returns one row
+    per at-risk group (the quasi values + its count); an empty result
+    certifies the table 8-anonymous over the pair.
 
     One hash aggregation with map-side partials; the output is bounded
     by the number of SMALL groups, so at 100 TB the audit returns the
     risk surface, never the data. Suppression/generalization is the
     caller's policy decision — this operator only finds the groups.
     """
-    if k < 2:
-        raise ValueError(f"k must be >= 2, got {k}")
-    if not quasi_cols:
-        raise ValueError("quasi_cols must be non-empty")
     return (
-        df.groupBy(*quasi_cols)
+        df.groupBy(*_QUASI_COLS)
         .agg(F.count(F.lit(1)).alias("n_rows"))
-        .filter(F.col("n_rows") < k)
+        .filter(F.col("n_rows") < 8)
     )
 
 
-def l_diversity_audit(
-    df: DataFrame,
-    quasi_cols: list[str],
-    sensitive_col: str,
-    l: int,  # noqa: E741 - the parameter IS called l in the literature
-) -> DataFrame:
-    """Privacy audit, second tier: quasi-identifier groups whose SENSITIVE
-    attribute takes fewer than ``l`` distinct values (Machanavajjhala et
+def l_diversity_audit(df: DataFrame) -> DataFrame:
+    """Privacy audit, second tier: quasi-identifier (``_QUASI_COLS``)
+    groups whose SENSITIVE attribute ``sens`` takes fewer than 3 distinct
+    values (Machanavajjhala et
     al.) — k-anonymity's blind spot, where a group is large enough to
     hide in but everyone in it shares the same sensitive value, so
     membership alone discloses it. Returns one row per failing group
     with its size, distinct-sensitive count, and the entropy of the
     sensitive distribution (the entropy-l-diversity strength measure);
-    an empty result certifies the table l-diverse over the pair.
+    an empty result certifies the table 3-diverse over the pair.
 
     Determinism: entropy terms follow the module convention — exact
     integer counts, one ln per (group, value) rounded to 6 and
@@ -222,20 +208,16 @@ def l_diversity_audit(
     aggregations ((quasi, sensitive) then quasi), both map-side partial;
     output bounded by the number of FAILING groups.
     """
-    if l < 2:
-        raise ValueError(f"l must be >= 2, got {l}")
-    if not quasi_cols:
-        raise ValueError("quasi_cols must be non-empty")
-    per_val = df.groupBy(*quasi_cols, sensitive_col).agg(
+    per_val = df.groupBy(*_QUASI_COLS, "sens").agg(
         F.count(F.lit(1)).alias("c")
     )
-    tot = per_val.groupBy(*quasi_cols).agg(F.sum("c").alias("n_rows"))
-    j = per_val.join(tot, quasi_cols)
+    tot = per_val.groupBy(*_QUASI_COLS).agg(F.sum("c").alias("n_rows"))
+    j = per_val.join(tot, _QUASI_COLS)
     term = F.col("c") * F.round(
         F.log(F.col("c") / F.col("n_rows")), 6
     ).cast("decimal(18,6)")
     return (
-        j.groupBy(*quasi_cols)
+        j.groupBy(*_QUASI_COLS)
         .agg(
             F.max("n_rows").alias("n_rows"),
             F.count(F.lit(1)).alias("distinct_sensitive"),
@@ -249,31 +231,31 @@ def l_diversity_audit(
                 + F.lit(0.0)
             ).alias("entropy"),
         )
-        .filter(F.col("distinct_sensitive") < l)
+        .filter(F.col("distinct_sensitive") < 3)
     )
 
 
-def mad_outliers(df: DataFrame, value_col: str, group_col: str) -> DataFrame:
-    """Robust per-group outlier detection via median absolute deviation:
-    flag rows with |x - median| > k * MAD (k = 4.4478 ~ 3 sigma under
-    normality via the 1.4826 consistency constant). The robust twin of
-    the z-score detector (`ev_value_anomalies`): medians don't move when
-    the outliers themselves inflate the spread, so a contaminated group
+def mad_outliers(df: DataFrame) -> DataFrame:
+    """Robust per-``event_type`` outlier detection of ``value`` via median
+    absolute deviation: flag rows with |x - median| > k * MAD (k = 4.4478 ~
+    3 sigma under normality via the 1.4826 consistency constant). The robust
+    twin of the z-score detector (`ev_value_anomalies`): medians don't move
+    when the outliers themselves inflate the spread, so a contaminated group
     still flags correctly — the failure mode mean/std detectors have.
 
     Two grouped exact-percentile passes (same per-group-sort cost
     contract as winsorize — swap `percentile` for `approx_percentile`
     at 100 TB) with the group-sized stats broadcast back; the flag is a
-    codegen'd comparison. Adds ``med``, ``mad``, ``<value_col>_outlier``.
+    codegen'd comparison. Adds ``med``, ``mad``, ``value_outlier``.
     """
-    v = F.col(value_col)
-    med = df.groupBy(group_col).agg(
-        F.round(F.expr(f"percentile({value_col}, 0.5)"), 6).alias("med")
+    v = F.col("value")
+    med = df.groupBy("event_type").agg(
+        F.round(F.expr("percentile(value, 0.5)"), 6).alias("med")
     )
-    j = df.join(F.broadcast(med), group_col)
-    mad = j.groupBy(group_col, "med").agg(
-        F.round(F.expr(f"percentile(abs({value_col} - med), 0.5)"), 6).alias("mad")
+    j = df.join(F.broadcast(med), "event_type")
+    mad = j.groupBy("event_type", "med").agg(
+        F.round(F.expr("percentile(abs(value - med), 0.5)"), 6).alias("mad")
     )
-    return df.join(F.broadcast(mad), group_col).withColumn(
-        f"{value_col}_outlier", F.abs(v - F.col("med")) > F.lit(4.4478) * F.col("mad")
+    return df.join(F.broadcast(mad), "event_type").withColumn(
+        "value_outlier", F.abs(v - F.col("med")) > F.lit(4.4478) * F.col("mad")
     )

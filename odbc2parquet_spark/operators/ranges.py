@@ -22,56 +22,47 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def range_join(
-    points: DataFrame,
-    intervals: DataFrame,
-    point_col: str,
-    start_col: str,
-    end_col: str,
-    bin_width: float,
-) -> DataFrame:
+def range_join(points: DataFrame, intervals: DataFrame) -> DataFrame:
     """Inner-join each point row to every interval row with
-    ``start_col <= point_col < end_col`` (half-open).
+    ``lo <= value < hi`` (half-open), through bins 50.0 wide.
     """
-    bw = F.lit(bin_width)
+    bw = F.lit(50.0)
     # Empty/inverted intervals (end <= start) can never match a point under
     # the half-open predicate, but Spark's sequence(a, b) is DESCENDING for
     # a > b — a single badly malformed row (end << start) would otherwise
-    # explode into |start-end|/bin_width candidate bins. Drop them first.
+    # explode into |lo-hi|/50 candidate bins. Drop them first.
     binned_intervals = intervals.filter(
-        F.col(end_col) > F.col(start_col)
+        F.col("hi") > F.col("lo")
     ).withColumn(
         "__bin",
         F.explode(
             F.sequence(
-                F.floor(F.col(start_col) / bw).cast("long"),
+                F.floor(F.col("lo") / bw).cast("long"),
                 # half-open: an interval ending exactly on a bin edge does
                 # not reach into that bin
                 F.floor(
-                    (F.col(end_col) - F.lit(1e-12)) / bw
+                    (F.col("hi") - F.lit(1e-12)) / bw
                 ).cast("long"),
             )
         ),
     )
     binned_points = points.withColumn(
-        "__bin", F.floor(F.col(point_col) / bw).cast("long")
+        "__bin", F.floor(F.col("value") / bw).cast("long")
     )
     on = (
         (binned_points["__bin"] == binned_intervals["__bin"])
-        & (binned_points[point_col] >= binned_intervals[start_col])
-        & (binned_points[point_col] < binned_intervals[end_col])
+        & (binned_points["value"] >= binned_intervals["lo"])
+        & (binned_points["value"] < binned_intervals["hi"])
     )
     return binned_points.join(binned_intervals, on).drop("__bin")
 
 
 def sweep_line_concurrency(
     intervals: DataFrame,
-    start_col: str,
-    end_col: str,
     boundary_source: tuple[DataFrame, str] | None = None,
 ) -> DataFrame:
     """Interval-overlap counting by sweep line: every interval emits a
-    (+1 at start, -1 at end) event point; the running sum of deltas in
+    (+1 at ``s``, -1 at ``e``) event point; the running sum of deltas in
     (t, delta) order IS the number of concurrently-open intervals at
     each point (ends apply before starts at ties — end-exclusive
     intervals never overlap themselves). The classic peak-concurrency /
@@ -103,9 +94,9 @@ def sweep_line_concurrency(
     from odbc2parquet_spark.operators.drift import prefix_sums
 
     pts = intervals.select(
-        F.col(start_col).alias("t"), F.lit(1).alias("delta")
+        F.col("s").alias("t"), F.lit(1).alias("delta")
     ).unionAll(
-        intervals.select(F.col(end_col).alias("t"), F.lit(-1).alias("delta"))
+        intervals.select(F.col("e").alias("t"), F.lit(-1).alias("delta"))
     )
     # delegate to the generalized two-pass prefix sum (one implementation
     # of the bucket/offsets/window plumbing to keep correct, not two);

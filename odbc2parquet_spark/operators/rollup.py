@@ -110,20 +110,16 @@ def resample_forward_fill(events: DataFrame) -> DataFrame:
     )
 
 
-def partial_agg_state(
-    df: DataFrame,
-    keys: list[str],
-    value_col: str,
-) -> DataFrame:
-    """Mergeable aggregate state per key: (n, s, mn, mx) with the sum on
-    exact decimals so merge order can never change the value.
+def partial_agg_state(df: DataFrame, keys: list[str]) -> DataFrame:
+    """Mergeable aggregate state of ``value`` per key: (n, s, mn, mx) with
+    the sum on exact decimals so merge order can never change the value.
 
     This is the materialized-view / continuous-aggregate building block:
     persist the state, and refreshing under new data is a state MERGE
     (:func:`merge_agg_states`), not a recompute over history — the
     difference between touching one day and touching 100 TB.
     """
-    v = F.col(value_col)
+    v = F.col("value")
     return df.groupBy(*keys).agg(
         F.count("*").cast("long").alias("n"),
         F.sum(v.cast("decimal(28,6)")).alias("s"),
@@ -208,10 +204,11 @@ def resample_interpolate(events: DataFrame) -> DataFrame:
     )
 
 
-def ewma_last_n(df: DataFrame, key_col: str, order_cols: list[str], value_col: str) -> DataFrame:
-    """Exponentially weighted moving average over the last 8
-    observations per key, decay 1/2 — the freshness-decayed engagement /
-    rate metric every event pipeline keeps per user.
+def ewma_last_n(df: DataFrame) -> DataFrame:
+    """Exponentially weighted moving average of ``value`` over the last 8
+    observations per ``user_id`` in (ts, event_id) order, decay 1/2 — the
+    freshness-decayed engagement / rate metric every event pipeline keeps
+    per user.
 
     ENGINE-EXACT by construction: with alpha = 1/2 the weights are powers
     of two, so every product ``value * 2^j`` is an EXACT double scaling
@@ -227,10 +224,8 @@ def ewma_last_n(df: DataFrame, key_col: str, order_cols: list[str], value_col: s
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(key_col).orderBy(*order_cols)
-    lags = [F.col(value_col)] + [
-        F.lag(value_col, i).over(w) for i in range(1, 8)
-    ]
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    lags = [F.col("value")] + [F.lag("value", i).over(w) for i in range(1, 8)]
     num = F.lit(0.0)
     den = F.lit(0)
     for i, lg in enumerate(lags):
@@ -240,8 +235,9 @@ def ewma_last_n(df: DataFrame, key_col: str, order_cols: list[str], value_col: s
     return df.withColumn("ewma", num / den)
 
 
-def rolling_trend(df: DataFrame, key_col: str, order_cols: list[str], value_col: str) -> DataFrame:
-    """Per-key rolling OLS slope over the trailing 8 observations —
+def rolling_trend(df: DataFrame) -> DataFrame:
+    """Per-``user_id`` rolling OLS slope of ``value`` over the trailing 8
+    observations in (ts, event_id) order —
     the linear-trend detector (is this user's metric rising or falling,
     and how fast) complementing ewma_last_n's level tracker.
 
@@ -256,11 +252,11 @@ def rolling_trend(df: DataFrame, key_col: str, order_cols: list[str], value_col:
 
     One keyed window, two passes of column arithmetic, no joins.
     """
-    wk = Window.partitionBy(key_col).orderBy(*order_cols)
+    wk = Window.partitionBy("user_id").orderBy("ts", "event_id")
     frame = wk.rowsBetween(-7, 0)
     x = F.row_number().over(wk)
     base = df.withColumn("_x_", x).withColumn(
-        "_y_", F.col(value_col).cast("decimal(18,6)")
+        "_y_", F.col("value").cast("decimal(18,6)")
     )
     sx = F.sum(F.col("_x_").cast("decimal(18,0)")).over(frame)
     sy = F.sum("_y_").over(frame)

@@ -20,20 +20,23 @@ from pyspark.sql import functions as F
 from odbc2parquet_spark.functions.hashing import HASH_DOMAIN, md5_long
 
 
-def stratified_sample(
-    df: DataFrame, strata_col: str, key_col: str, fractions: dict[str, float]
-) -> DataFrame:
-    """Per-stratum hash sampling (e.g. downsample overrepresented
-    languages). Strata absent from ``fractions`` are dropped; the
-    threshold is a when-chain, so still a narrow filter with no join."""
-    h = md5_long(F.col(key_col).cast("string"))
+#: stratified_sample's keep fraction per ``lang``
+_FRACTIONS = {"en": 0.5, "de": 1.0, "es": 0.25}
+
+
+def stratified_sample(df: DataFrame) -> DataFrame:
+    """Per-``lang`` hash sampling of ``doc_id`` at the ``_FRACTIONS``
+    keep rates (downsample overrepresented languages). Languages absent
+    from ``_FRACTIONS`` are dropped; the threshold is a when-chain, so
+    still a narrow filter with no join."""
+    h = md5_long(F.col("doc_id").cast("string"))
     thr = None
-    for value, frac in fractions.items():
+    for value, frac in _FRACTIONS.items():
         cond = F.lit(int(frac * HASH_DOMAIN))
         thr = (
-            F.when(F.col(strata_col) == value, cond)
+            F.when(F.col("lang") == value, cond)
             if thr is None
-            else thr.when(F.col(strata_col) == value, cond)
+            else thr.when(F.col("lang") == value, cond)
         )
     thr = thr.otherwise(F.lit(0))
     return df.filter(h < thr)
@@ -45,12 +48,11 @@ _QUANT = 1 << 40  # rate quantization: floor(rate * 2^40) is exact in double
 def _rate_sample(
     df: DataFrame,
     source_col: str,
-    key_col: str,
     rated: DataFrame,
     target: DataFrame,
     weight: F.Column,
 ) -> DataFrame:
-    """Hash-threshold sample ``df`` at each source's keep-rate
+    """Hash-threshold sample ``df`` by ``doc_id`` at each source's keep-rate
     ``weight * _t_ / _n_``, read from the per-source ``rated`` frame
     (``_src_``, ``_n_``) joined with the one-row ``target`` (``_t_``),
     quantized to 2^-40 as :func:`mixture_sample` describes."""
@@ -65,7 +67,7 @@ def _rate_sample(
         )
         .select("_src_", "_thr_")
     )
-    h = md5_long(F.col(key_col).cast("string"))
+    h = md5_long(F.col("doc_id").cast("string"))
     return (
         df.join(F.broadcast(thresholds), df[source_col] == F.col("_src_"))
         .filter(h < F.col("_thr_"))
@@ -73,10 +75,12 @@ def _rate_sample(
     )
 
 
-def mixture_sample(
-    df: DataFrame, source_col: str, key_col: str, weights: dict[str, float]
-) -> DataFrame:
-    """Reweight a multi-source corpus to target ``weights`` proportions.
+#: mixture_sample's target proportion per ``source``
+_MIXTURE = {"src0": 0.5, "src1": 0.25, "src2": 0.25}
+
+
+def mixture_sample(df: DataFrame) -> DataFrame:
+    """Reweight a multi-``source`` corpus to the ``_MIXTURE`` proportions.
 
     The largest achievable mixture keeps every row of the most
     underrepresented source (relative to its weight): with N_s rows per
@@ -89,28 +93,25 @@ def mixture_sample(
     ``hash < rate * 2^60`` double comparison is inexact above 2^53 and
     would make boundary rows engine-dependent).
     """
-    counts = df.groupBy(F.col(source_col).alias("_src_")).agg(
+    counts = df.groupBy(F.col("source").alias("_src_")).agg(
         F.count("*").alias("_n_")
     )
-    w = F.create_map(*[F.lit(x) for kv in weights.items() for x in kv])
-    rated = counts.filter(F.col("_src_").isin(*weights)).withColumn(
+    w = F.create_map(*[F.lit(x) for kv in _MIXTURE.items() for x in kv])
+    rated = counts.filter(F.col("_src_").isin(*_MIXTURE)).withColumn(
         "_ratio_", F.col("_n_") / w[F.col("_src_")]
     )
     target = rated.agg(F.min("_ratio_").alias("_t_"))
-    return _rate_sample(df, source_col, key_col, rated, target, w[F.col("_src_")])
+    return _rate_sample(df, "source", rated, target, w[F.col("_src_")])
 
 
-def pps_sample(
-    df: DataFrame,
-    weight_col: str,
-    k: int,
-) -> DataFrame:
+def pps_sample(df: DataFrame) -> DataFrame:
     """Systematic probability-proportional-to-size (PPS) sampling: draw
-    exactly ``k`` units (with multiplicity) so each row's expected draw
-    count is k * w / W — the quality/length-weighted corpus subsampling
-    step of a training-data pipeline, in PURE INTEGER arithmetic so any
-    engine reproduces the sample bit-for-bit (no pow/log priorities,
-    whose 1-ulp libm differences can flip ranks across engines).
+    exactly k = 500 units (with multiplicity) so each row's expected draw
+    count is k * w / W for weight w = ``n_chars`` — the
+    quality/length-weighted corpus subsampling step of a training-data
+    pipeline, in PURE INTEGER arithmetic so any engine reproduces the sample
+    bit-for-bit (no pow/log priorities, whose 1-ulp libm differences can
+    flip ranks across engines).
 
     Construction: rows are ordered by a hash of their id (a deterministic
     pseudo-random permutation — systematic sampling needs random order to
@@ -138,7 +139,7 @@ def pps_sample(
     width = -(-HASH_DOMAIN // 32)  # ceil: pid < 32
     keyed = df.select(
         F.col("doc_id"),
-        F.col(weight_col).cast("long").alias("w"),
+        F.col("n_chars").cast("long").alias("w"),
         md5_long(F.col("doc_id").cast("string")).alias("_h_"),
     )
     with_pid = keyed.withColumn(
@@ -177,17 +178,17 @@ def pps_sample(
     # hits(x) via INT64 `div` (never double division — exact at any W)
     def hits(num_col: str) -> str:
         return (
-            f"least(cast({k} as bigint), greatest(cast(0 as bigint), "
+            "least(cast(500 as bigint), greatest(cast(0 as bigint), "
             f"{num_col} div {2 * total_w}))"
         )
 
     out = (
         with_pid.join(offset_df, "_pid_")
         .select("doc_id", "w", cum)
-        .withColumn("_hi_", 2 * F.lit(k) * F.col("cum") + F.lit(total_w - 1))
+        .withColumn("_hi_", 2 * F.lit(500) * F.col("cum") + F.lit(total_w - 1))
         .withColumn(
             "_lo_",
-            2 * F.lit(k) * (F.col("cum") - F.col("w")) + F.lit(total_w - 1),
+            2 * F.lit(500) * (F.col("cum") - F.col("w")) + F.lit(total_w - 1),
         )
         .select(
             "doc_id",
@@ -199,34 +200,29 @@ def pps_sample(
     return out
 
 
-def ab_assign(df: DataFrame, key_col: str) -> DataFrame:
+def ab_assign(df: DataFrame) -> DataFrame:
     """Deterministic two-arm experiment assignment: variant = hash-slot of
-    the unit key salted with ``exp:`` (same contract as the train/val
-    split — no RNG, no state; a unit keeps its arm across reruns,
-    partitionings and engines, and any engine can re-derive the
-    assignment for audit).
+    the unit key ``user_id`` salted with ``exp:`` (same contract as the
+    train/val split — no RNG, no state; a unit keeps its arm across reruns,
+    partitionings and engines, and any engine can re-derive the assignment
+    for audit).
 
     Adds a ``variant`` column 'A' or 'B' — pure map expression, zero
     shuffles. Assigning on the USER key (not the event) keeps all of a
     unit's events in one arm, the correctness condition for any
     per-unit experiment metric.
     """
-    slot = md5_long(F.concat(F.lit("exp:"), F.col(key_col).cast("string"))) % 2
+    slot = md5_long(F.concat(F.lit("exp:"), F.col("user_id").cast("string"))) % 2
     return df.withColumn("variant", F.when(slot == 0, "A").when(slot == 1, "B"))
 
 
-def reservoir_sample(
-    df: DataFrame,
-    group_cols: list[str],
-    key_col: str,
-    weight_col: str,
-    k: int,
-) -> DataFrame:
-    """Per-group weighted reservoir sample (Efraimidis-Spirakis A-Res):
-    each row draws u = (md5_60(key)+1) / 2^60 and scores u^(1/w); the k
-    highest scores per group are a weighted-without-replacement sample —
-    P(selected) proportional to weight, exactly the distributed
-    equivalent of the classic streaming reservoir.
+def reservoir_sample(df: DataFrame) -> DataFrame:
+    """Per-``lang`` weighted reservoir sample (Efraimidis-Spirakis A-Res):
+    each row draws u = (md5_60(doc_id)+1) / 2^60 and scores u^(1/w) with
+    weight w = ``n_chars``; the 16 highest scores per group are a
+    weighted-without-replacement sample — P(selected) proportional to
+    weight, exactly the distributed equivalent of the classic streaming
+    reservoir.
 
     Deterministic for the same reason as the hash-threshold samplers (u
     is a pure row function), so the SAMPLE ITSELF is reproducible across
@@ -244,27 +240,28 @@ def reservoir_sample(
     engine-exact, not merely the rounded output.
 
     At 100 TB: one keyed window whose partial top-k Spark pushes below
-    the shuffle (WindowGroupLimit), so each task ships at most k rows
+    the shuffle (WindowGroupLimit), so each task ships at most 16 rows
     per group — reservoir semantics without a global sort.
     """
     from pyspark.sql import Window
 
-    h = md5_long(F.col(key_col).cast("string"))
+    h = md5_long(F.col("doc_id").cast("string"))
     u = (h + 1).cast("double") / F.lit(float(HASH_DOMAIN))
-    score = F.round(F.log(u), 9) / F.col(weight_col).cast("double")
-    w = Window.partitionBy(*group_cols).orderBy(F.desc("_score_"), F.col(key_col))
+    score = F.round(F.log(u), 9) / F.col("n_chars").cast("double")
+    w = Window.partitionBy("lang").orderBy(F.desc("_score_"), F.col("doc_id"))
     return (
-        df.filter(F.col(weight_col) > 0)
+        df.filter(F.col("n_chars") > 0)
         .withColumn("_score_", score)
         .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= 16)
         .withColumn("score6", F.round(F.col("_score_"), 6))
         .drop("_score_")
     )
 
 
-def purged_time_split(df: DataFrame, ts_us_col: str) -> DataFrame:
-    """Leakage-safe temporal train/test split with a one-day embargo gap
+def purged_time_split(df: DataFrame) -> DataFrame:
+    """Leakage-safe temporal train/test split of the microsecond times
+    ``us`` with a one-day embargo gap
     (the purged split of Lopez de Prado 2018, ch.7): train = rows at or
     before the cutoff, test = rows after cutoff + 1 day, and rows
     INSIDE the gap are purged — so features built from trailing windows
@@ -279,7 +276,7 @@ def purged_time_split(df: DataFrame, ts_us_col: str) -> DataFrame:
     max_us); the row-level labeled frame is the same CASE applied
     upstream of any consumer.
     """
-    ts = F.col(ts_us_col)
+    ts = F.col("us")
     bounds = df.agg(F.min(ts).alias("_mn_"), F.max(ts).alias("_mx_"))
     # Exact integer division end-to-end (`div` on longs): a double
     # round-trip here is NOT engine-portable — Spark's CAST(double AS
@@ -304,34 +301,30 @@ def purged_time_split(df: DataFrame, ts_us_col: str) -> DataFrame:
     )
 
 
-def kfold_assign(df: DataFrame, key_col: str, strata_col: str | None = None) -> DataFrame:
+def kfold_assign(df: DataFrame) -> DataFrame:
     """Deterministic k-fold cross-validation assignment: fold =
-    md5_60(key) % 5 — a pure row function like every sampler here,
+    md5_60(doc_id) % 5 — a pure row function like every sampler here,
     so folds are reproducible across runs, partitionings, and engines,
     and any fold's complement is recoverable without storing assignments.
     Balance holds in expectation (hash uniformity), NOT by per-stratum
     round-robin — an exact-balance window keyed on a handful of strata
     would funnel 100 TB through |strata| tasks for cosmetic gain.
 
-    Returns the bounded per-(stratum, fold) certificate (counts), the
+    Returns the bounded per-(lang, fold) certificate (counts), the
     evidence the balance claim rests on; apply the same fold expression
     upstream to materialize row-level assignments.
     """
-    fold = (md5_long(F.col(key_col).cast("string")) % 5).alias("fold")
-    cols = ([F.col(strata_col)] if strata_col else []) + [fold]
-    names = ([strata_col] if strata_col else []) + ["fold"]
-    return df.select(*cols).groupBy(*names).agg(F.count("*").alias("n_rows"))
+    fold = (md5_long(F.col("doc_id").cast("string")) % 5).alias("fold")
+    return df.select(F.col("lang"), fold).groupBy("lang", "fold").agg(F.count("*").alias("n_rows"))
 
 
-def temperature_sample(
-    df: DataFrame, source_col: str, key_col: str
-) -> DataFrame:
-    """Temperature resampling at alpha = 0.5 (the multilingual-LM
-    rebalance: sample source s proportional to N_s^alpha, lifting
-    low-resource sources without drowning high-resource ones). With
-    weights w_s = sqrt(N_s), the largest achievable mixture keeps the
-    binding source whole: keep-rate r_s = sqrt(N_s) * min_u sqrt(N_u)
-    / N_s — computed wholly in-plan from the per-source counts
+def temperature_sample(df: DataFrame) -> DataFrame:
+    """Temperature resampling of ``doc_id`` at alpha = 0.5 (the
+    multilingual-LM rebalance: sample ``lang`` source s proportional to
+    N_s^alpha, lifting low-resource sources without drowning high-resource
+    ones). With weights w_s = sqrt(N_s), the largest achievable mixture
+    keeps the binding source whole: keep-rate r_s = sqrt(N_s) * min_u
+    sqrt(N_u) / N_s — computed wholly in-plan from the per-source counts
     (|sources| rows), scale-free (no normalization sum, hence no
     addition-order sensitivity).
 
@@ -341,9 +334,9 @@ def temperature_sample(
     then hash-threshold selected (same 2^-40 quantization as
     mixture_sample), so the oracle reproduces the exact sample.
     """
-    counts = df.groupBy(F.col(source_col).alias("_src_")).agg(
+    counts = df.groupBy(F.col("lang").alias("_src_")).agg(
         F.count("*").alias("_n_")
     )
     rated = counts.withColumn("_w_", F.sqrt(F.col("_n_")))
     target = rated.agg(F.min(F.col("_n_") / F.col("_w_")).alias("_t_"))
-    return _rate_sample(df, source_col, key_col, rated, target, F.col("_w_"))
+    return _rate_sample(df, "lang", rated, target, F.col("_w_"))

@@ -26,13 +26,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def kth_smallest(df: DataFrame, col: str, k: int) -> float:
-    """The exact k-th smallest (1-based) non-null value of ``col``.
+def kth_smallest(df: DataFrame, k: int) -> float:
+    """The exact k-th smallest (1-based) non-null value of ``l_extendedprice``.
 
     Raises ``ValueError`` when k is out of range. The value returned is
     an actual data value (bit-exact), not an interpolation.
     """
-    vals = df.select(F.col(col).cast("double").alias("v")).filter(
+    vals = df.select(F.col("l_extendedprice").cast("double").alias("v")).filter(
         F.col("v").isNotNull()
     )
     first = vals.agg(
@@ -72,20 +72,21 @@ def kth_smallest(df: DataFrame, col: str, k: int) -> float:
     raise RuntimeError("selection did not converge in 64 rounds")
 
 
-def exact_median(df: DataFrame, col: str) -> DataFrame:
-    """One-row (n_rows, median): the exact global median — lower-middle
-    value for odd counts, the IEEE mean of the two middle values for
-    even counts (the same convention DuckDB's MEDIAN uses, so the result
-    hash-matches an independent engine despite never sorting).
+def exact_median(df: DataFrame) -> DataFrame:
+    """One-row (n_rows, median): the exact global median of
+    ``l_extendedprice`` — lower-middle value for odd counts, the IEEE mean
+    of the two middle values for even counts (the same convention DuckDB's
+    MEDIAN uses, so the result hash-matches an independent engine despite
+    never sorting).
     """
     spark = df.sparkSession
-    n = df.filter(F.col(col).isNotNull()).count()
+    n = df.filter(F.col("l_extendedprice").isNotNull()).count()
     if n == 0:
         return spark.createDataFrame([(0, None)], "n_rows long, median double")
     if n % 2 == 1:
-        med = kth_smallest(df, col, (n + 1) // 2)
+        med = kth_smallest(df, (n + 1) // 2)
     else:
-        a = kth_smallest(df, col, n // 2)
-        b = kth_smallest(df, col, n // 2 + 1)
+        a = kth_smallest(df, n // 2)
+        b = kth_smallest(df, n // 2 + 1)
         med = (a + b) / 2.0
     return spark.createDataFrame([(n, float(med))], "n_rows long, median double")

@@ -36,10 +36,7 @@ def pack_shards(docs_with_tokens: DataFrame, budget: int) -> DataFrame:
     )
 
 
-def pack_shards_two_pass(
-    docs_with_tokens: DataFrame,
-    budget: int,
-) -> DataFrame:
+def pack_shards_two_pass(docs_with_tokens: DataFrame) -> DataFrame:
     """Same output as :func:`pack_shards` without the global-window funnel.
 
     Buckets come from the literal-boundary scheme of
@@ -56,9 +53,7 @@ def pack_shards_two_pass(
     )
 
     spark = docs_with_tokens.sparkSession
-    with_pid = docs_with_tokens.withColumn(
-        "_pid_", order_bucket_col(docs_with_tokens, "doc_id", 32)
-    )
+    with_pid = docs_with_tokens.withColumn("_pid_", order_bucket_col(docs_with_tokens, "doc_id"))
     offs, _ = bucket_offsets(with_pid, ["n_tokens"])
     offset_df = F.broadcast(
         spark.createDataFrame(
@@ -79,7 +74,7 @@ def pack_shards_two_pass(
         .select(
             "doc_id",
             F.col("n_tokens"),
-            F.floor((local_prefix + F.col("_offset_")) / F.lit(budget))
+            F.floor((local_prefix + F.col("_offset_")) / F.lit(500))
             .cast("long")
             .alias("shard"),
         )

@@ -25,6 +25,25 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+#: embedding width every vector operator here expects
+DIM = 64
+#: hyperplanes of the LSH graph signatures (knn_graph, the graph queries)
+N_PLANES = 16
+#: IVF: seed cells, and the cells each query probes
+K_CELLS = 16
+NPROBE = 4
+#: PQ operating point, chosen by a measured recall sweep at sf0.1 (round
+#: 7): 32 subspaces of 2 dims with 256 deterministic seed codewords. m=8/k=16
+#: scored recall@10 = 0.20-0.30 — unusable; m=32/k=256 scores 0.72 seeded
+#: and ~0.8 Lloyd-refined, with the IVF cell-routing ceiling measured at
+#: 0.99 (nprobe=4), so code distortion is the only recall lever that
+#: matters here. 2-dim subspaces keep numpy's distance sums sequential
+#: (pairwise summation only reassociates from 8 terms), which the
+#: cross-engine bit-exactness contract needs.
+PQ_M = 32
+PQ_SUB = DIM // PQ_M
+PQ_K = 256
+
 
 def _fold_sum(arr: F.Column) -> F.Column:
     """Left-fold sum of a double array (deterministic order) as one
@@ -53,19 +72,19 @@ def cosine(a: F.Column, b: F.Column) -> F.Column:
     return dot(a, b) / F.sqrt(norm_sq(a) * norm_sq(b))
 
 
-def _checked_dim(vec: F.Column, dim: int, where: str) -> F.Column:
-    """Fail LOUDLY when the embedding width disagrees with ``dim``: a
+def _checked_dim(vec: F.Column, where: str) -> F.Column:
+    """Fail LOUDLY when the embedding width is not ``DIM``: a
     zip_with against a wrong-width plane pads with NULLs, the fold goes
     NULL, and every signature silently collapses to 0 (one mega-bucket
     the cap then drops — zero candidates, no error). Codegen'd
     comparison; free when widths match."""
     return F.when(
-        F.size(vec) != dim,
+        F.size(vec) != DIM,
         F.raise_error(
             F.concat(
                 F.lit(f"{where}: embedding length "),
                 F.size(vec).cast("string"),
-                F.lit(f" != dim={dim}"),
+                F.lit(f" != dim={DIM}"),
             )
         ),
     ).otherwise(vec)
@@ -126,35 +145,36 @@ def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 10) -> Dat
     return _cosine_rank(scored, k)
 
 
-def hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
+def hyperplanes(n_planes: int) -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes in [-1, 1).
 
-    Components derive from md5(f"{plane}:{dim}") — reproducible anywhere
+    Components derive from md5(f"{plane}:{d}") for d < ``DIM`` —
+    reproducible anywhere
     (the DuckDB oracle embeds the same literals).
     """
     planes = []
     for j in range(n_planes):
         row = []
-        for d in range(dim):
+        for d in range(DIM):
             h = int(hashlib.md5(f"{j}:{d}".encode()).hexdigest()[:8], 16)
             row.append(h / float(2**31) - 1.0)
         planes.append(row)
     return planes
 
 
-def lsh_signatures(vectors: DataFrame, n_planes: int = 16, dim: int = 64) -> DataFrame:
+def lsh_signatures(vectors: DataFrame, n_planes: int) -> DataFrame:
     """b-bit random-hyperplane signature per vector: (vec_id, sig).
 
     One narrow projection pass, no shuffle; signatures feed the bucket
     pairing of :func:`capped_bucket_pairs` in place of a cross join.
     """
-    planes = hyperplanes(n_planes, dim)
+    planes = hyperplanes(n_planes)
     # One packed plane-matrix literal + a single indexed transform: the
     # projection is ONE expression (a loop over planes in codegen) instead
     # of n_planes unrolled aggregate folds — same signatures (bit j set
     # iff dot(v, plane_j) > 0), ~n_planes-times smaller expression tree.
     mat = F.array(*[F.array(*[F.lit(x) for x in plane]) for plane in planes])
-    vec = _checked_dim(F.col("embedding"), dim, "lsh_signatures")
+    vec = _checked_dim(F.col("embedding"), "lsh_signatures")
     bits = F.transform(
         mat,
         lambda plane, j: F.when(
@@ -344,14 +364,14 @@ def lsh_bucket_pairs(
 # search touches nprobe/k_cells of the data instead of all of it.
 
 
-def ivf_seed_centroids(vectors: DataFrame, k_cells: int = 16) -> DataFrame:
-    """Deterministic seed centroids: the ``k_cells`` lowest-id vectors.
+def ivf_seed_centroids(vectors: DataFrame) -> DataFrame:
+    """Deterministic seed centroids: the ``K_CELLS`` lowest-id vectors.
 
     No RNG so any engine reproduces the index bit-for-bit; refine with
     :func:`ivf_refine_centroids` (Lloyd steps) when quality matters more
     than reproducibility.
     """
-    return vectors.orderBy("vec_id").limit(k_cells).select(
+    return vectors.orderBy("vec_id").limit(K_CELLS).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
     )
 
@@ -486,13 +506,8 @@ def ivf_refine_centroids(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def ivf_search(
-    vectors: DataFrame,
-    queries: DataFrame,
-    centroids: DataFrame,
-    nprobe: int = 4,
-) -> DataFrame:
-    """Approximate top-10: score each query against its ``nprobe`` nearest
+def ivf_search(vectors: DataFrame, queries: DataFrame, centroids: DataFrame) -> DataFrame:
+    """Approximate top-10: score each query against its ``NPROBE`` nearest
     cells only.
 
     Plan shape at scale: corpus->cell assignment is the (cachable /
@@ -504,7 +519,7 @@ def ivf_search(
         F.col("vec_id").alias("neighbor_id"), "centroid_id"
     )
     qprobe = (
-        ivf_probe_cells(queries, centroids, nprobe)
+        ivf_probe_cells(queries, centroids, NPROBE)
         .select("query_id", "centroid_id")
     )
     q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
@@ -527,7 +542,7 @@ def ivf_search(
     return _cosine_rank(scored, 10)
 
 
-def ivf_probe_cells(queries: DataFrame, centroids: DataFrame, nprobe: int = 4) -> DataFrame:
+def ivf_probe_cells(queries: DataFrame, centroids: DataFrame, nprobe: int) -> DataFrame:
     """(query_id, centroid_id, rank): each query's nprobe nearest cells."""
     c = F.broadcast(centroids)
     scored = queries.select(
@@ -649,60 +664,41 @@ def centroid_outliers(vectors: DataFrame) -> DataFrame:
     )
 
 
-def _pq_split(m: int) -> int:
-    """Subspace width of a 64-wide vector, rejecting lossy splits: with
-    64 % m != 0 the trailing dimensions would silently vanish from
-    codebook, codes and LUT alike."""
-    if 64 % m:
-        raise ValueError(f"dim=64 must be divisible by m={m} subspaces")
-    return 64 // m
-
-
-def _subspace_melt(vec_col: str, m: int, sub: int, field: str) -> F.Column:
-    """array<struct(subspace, <field>)> of the vector's m contiguous
-    slices — the ONE definition of the PQ subspace layout, shared by
+def _subspace_melt(vec_col: str, field: str) -> F.Column:
+    """array<struct(subspace, <field>)> of the vector's ``PQ_M``
+    contiguous slices — the ONE definition of the PQ subspace layout, shared by
     codebook build, code assignment and the probe LUT so the three can
     never disagree on which dimensions belong to which subspace."""
     return F.array(
         *[
             F.struct(
                 F.lit(s).alias("subspace"),
-                F.slice(F.col(vec_col), s * sub + 1, sub).alias(field),
+                F.slice(F.col(vec_col), s * PQ_SUB + 1, PQ_SUB).alias(field),
             )
-            for s in range(m)
+            for s in range(PQ_M)
         ]
     )
 
 
-def pq_codebook(
-    vectors: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_codebook(vectors: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """(subspace, cid, c8): a product-quantization codebook — the 64-wide
-    vector space split into ``m`` contiguous subspaces, each with ``k`` centroids
-    taken deterministically from the ``k`` lowest-id vectors' slices (the
-    same no-RNG seeding rule as :func:`ivf_seed_centroids`, so any engine
-    rebuilds the codebook bit-for-bit; run Lloyd per subspace when recall
-    matters more than reproducibility)."""
-    sub = _pq_split(m)
-    seeds = vectors.orderBy("vec_id").limit(k)
+    vector space split into ``PQ_M`` contiguous subspaces, each with
+    ``PQ_K`` centroids taken deterministically from the ``PQ_K`` lowest-id
+    vectors' slices (the same no-RNG seeding rule as
+    :func:`ivf_seed_centroids`, so any engine rebuilds the codebook
+    bit-for-bit; run Lloyd per subspace when recall matters more than
+    reproducibility)."""
+    seeds = vectors.orderBy("vec_id").limit(PQ_K)
     return seeds.select(
         F.col("vec_id").alias("cid"),
-        F.explode(_subspace_melt(vec_col, m, sub, "c8")).alias("sc"),
+        F.explode(_subspace_melt(vec_col, "c8")).alias("sc"),
     ).select("cid", F.col("sc.subspace").alias("subspace"), F.col("sc.c8").alias("c8"))
 
 
-def pq_refine_codebook(
-    vectors: DataFrame,
-    codebook: DataFrame,
-    m: int = 8,
-    iterations: int = 1,
-) -> DataFrame:
+def pq_refine_codebook(vectors: DataFrame, codebook: DataFrame) -> DataFrame:
     """Per-subspace Lloyd refinement of a PQ codebook — the quality lever
     over the deterministic low-id seeding: assign codes, replace each
-    centroid with the mean of its assigned slices, repeat.
+    centroid with the mean of its assigned slices; two rounds.
 
     Each iteration is one broadcast assign (pq_assign) + one
     (subspace, code, pos) mean — m*k*sub groups, tiny — so the corpus is
@@ -716,16 +712,15 @@ def pq_refine_codebook(
     divided once, rounded to 6 decimals, cast to float — the same
     order-independence rule as every other cross-engine aggregate here.
     """
-    sub = _pq_split(m)
     cur = codebook
-    for _ in range(iterations):
+    for _ in range(2):
         melted = vectors.select(
             F.col("vec_id"),
-            F.explode(_subspace_melt("embedding", m, sub, "v8")).alias("sv"),
+            F.explode(_subspace_melt("embedding", "v8")).alias("sv"),
         ).select(
             "vec_id", F.col("sv.subspace").alias("subspace"), F.col("sv.v8").alias("v8")
         )
-        codes = pq_assign(vectors, cur, m=m)
+        codes = pq_assign(vectors, cur)
         assigned = codes.join(melted, ["vec_id", "subspace"]).select(
             "subspace", "code", "v8"
         )
@@ -754,7 +749,7 @@ def pq_refine_codebook(
     return cur
 
 
-def _dense_values(col, n_rows: int, dim: int):
+def _dense_values(col, n_rows: int):
     """Flat float values of an Arrow list column, REFUSING nulls and
     ragged lengths: a null vector or a wrong-length vector would
     otherwise silently misalign the (n, m, sub) reshape and corrupt
@@ -762,36 +757,28 @@ def _dense_values(col, n_rows: int, dim: int):
     if col.null_count:
         raise ValueError("PQ kernel: null embedding vectors are not supported")
     flat = col.flatten().to_numpy(zero_copy_only=False)
-    if flat.size != n_rows * dim:
+    if flat.size != n_rows * DIM:
         raise ValueError(
-            f"PQ kernel: expected {n_rows} x {dim} embedding values, got "
+            f"PQ kernel: expected {n_rows} x {DIM} embedding values, got "
             f"{flat.size} (ragged or wrong-dim vectors)"
         )
     return flat
 
 
-def _collect_codebook(codebook: DataFrame, m: int, sub: int):
+def _collect_codebook(codebook: DataFrame):
     """Codebook as per-subspace (cid array, centroid matrix) numpy pairs,
     cid-sorted — a bounded driver reduction (a PQ codebook is m*k tiny
     rows BY DEFINITION; it exists to be memory-resident). Shared by the
     assignment and probe-LUT Arrow kernels so both see the identical
-    cid order the tiebreak contract depends on. Rejects sub > 8: numpy's
-    pairwise summation is sequential only below 8 terms, and the
-    cross-engine bit-exactness contract needs in-order sums."""
+    cid order the tiebreak contract depends on."""
     import numpy as np
 
-    if sub > 8:
-        raise ValueError(
-            f"subspace width {sub} > 8: numpy's pairwise summation would "
-            "reassociate the distance sum and break the cross-engine "
-            "bit-exactness contract"
-        )
     rows = codebook.select("subspace", "cid", "c8").collect()
     by_s: dict[int, list] = {}
     for r in rows:
         by_s.setdefault(r.subspace, []).append((r.cid, list(r.c8)))
     cb_cids, cb_mats = [], []
-    for s in range(m):
+    for s in range(PQ_M):
         entries = sorted(by_s.get(s, []))
         if not entries:
             raise ValueError(f"codebook has no centroids for subspace {s}")
@@ -800,7 +787,7 @@ def _collect_codebook(codebook: DataFrame, m: int, sub: int):
     return cb_cids, cb_mats
 
 
-def _pq_kernel(codebook: DataFrame, m: int, arrays) -> tuple[list, Callable]:
+def _pq_kernel(codebook: DataFrame, arrays) -> tuple[list, Callable]:
     """(per-subspace centroid ids, ``d2``): the Arrow kernel that
     :func:`pq_assign` and :func:`_pq_probe_lut` share. ``d2`` maps
     (id, vector) record batches to (ids, per-subspace matrices of the
@@ -813,19 +800,18 @@ def _pq_kernel(codebook: DataFrame, m: int, arrays) -> tuple[list, Callable]:
     is the dominant fixed cost per search."""
     import numpy as np
 
-    sub = _pq_split(m)
-    cb_cids, cb_mats = arrays or _collect_codebook(codebook, m, sub)
+    cb_cids, cb_mats = arrays or _collect_codebook(codebook)
 
     def d2(batches):
         for b in batches:
             n = b.num_rows
             if n == 0:
                 continue
-            flat = _dense_values(b.column(1), n, m * sub)
-            Vs = flat.astype(np.float64).reshape(n, m, sub)
+            flat = _dense_values(b.column(1), n)
+            Vs = flat.astype(np.float64).reshape(n, PQ_M, PQ_SUB)
             yield b.column(0).to_numpy(zero_copy_only=False), (
                 np.square(Vs[:, s, None, :] - cb_mats[s][None, :, :]).sum(axis=-1)
-                for s in range(m)
+                for s in range(PQ_M)
             )
 
     return cb_cids, d2
@@ -834,12 +820,11 @@ def _pq_kernel(codebook: DataFrame, m: int, arrays) -> tuple[list, Callable]:
 def pq_assign(
     vectors: DataFrame,
     codebook: DataFrame,
-    m: int = 8,
     vec_col: str = "embedding",
     arrays=None,
 ) -> DataFrame:
     """(vec_id, subspace, code, dist4): per-subspace nearest-centroid codes
-    — the PQ compression step that stores a 64-float vector as ``m`` small
+    — the PQ compression step that stores a 64-float vector as ``PQ_M`` small
     codes (8 bytes + codebook), the standard layout for billion-scale ANN
     memory residency.
 
@@ -867,21 +852,21 @@ def pq_assign(
     import numpy as np
     import pyarrow as pa
 
-    cb_cids, d2 = _pq_kernel(codebook, m, arrays)
-    subspaces = np.arange(m, dtype=np.int32)
+    cb_cids, d2 = _pq_kernel(codebook, arrays)
+    subspaces = np.arange(PQ_M, dtype=np.int32)
 
     def assign_batches(batches):
         for ids, ds in d2(batches):
             n = len(ids)
-            codes = np.empty((n, m), dtype=np.int64)
-            d2min = np.empty((n, m), dtype=np.float64)
+            codes = np.empty((n, PQ_M), dtype=np.int64)
+            d2min = np.empty((n, PQ_M), dtype=np.float64)
             for s, d in enumerate(ds):
                 j = np.argmin(d, axis=1)  # ties -> first = lowest cid
                 codes[:, s] = cb_cids[s][j]
                 d2min[:, s] = d[np.arange(n), j]
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(np.repeat(ids, m), type=pa.int64()),
+                    pa.array(np.repeat(ids, PQ_M), type=pa.int64()),
                     pa.array(np.tile(subspaces, n), type=pa.int32()),
                     pa.array(codes.reshape(-1), type=pa.int64()),
                     pa.array(d2min.reshape(-1), type=pa.float64()),
@@ -900,7 +885,6 @@ def pq_assign(
 def _pq_probe_lut(
     probes: DataFrame,
     codebook: DataFrame,
-    m: int,
     id_col: str,
     vec_col: str,
     arrays=None,
@@ -918,7 +902,7 @@ def _pq_probe_lut(
     import numpy as np
     import pyarrow as pa
 
-    cb_cids, d2 = _pq_kernel(codebook, m, arrays)
+    cb_cids, d2 = _pq_kernel(codebook, arrays)
 
     def lut_batches(batches):
         for ids, ds in d2(batches):
@@ -974,8 +958,6 @@ def _adc_rank(scored: DataFrame) -> DataFrame:
 def pq_adc_topk(
     vectors: DataFrame,
     probes: DataFrame,
-    m: int = 8,
-    k_centroids: int = 16,
     codebook: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-10 over PQ codes — the search half of
@@ -1003,9 +985,9 @@ def pq_adc_topk(
     cb = (
         codebook
         if codebook is not None
-        else pq_codebook(vectors, m=m, k=k_centroids)
+        else pq_codebook(vectors)
     )
-    codes, lut = _pq_codes_lut(vectors, probes, cb, m)
+    codes, lut = _pq_codes_lut(vectors, probes, cb)
     scored = (
         codes.join(F.broadcast(lut), ["subspace", "code"])
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -1016,45 +998,38 @@ def pq_adc_topk(
 
 
 def _pq_codes_lut(
-    vectors: DataFrame, probes: DataFrame, cb: DataFrame, m: int
+    vectors: DataFrame, probes: DataFrame, cb: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """(codes, lut): the PQ codes of ``vectors`` and the ADC lookup table
     of ``probes`` under codebook ``cb``, which is collected once for both."""
-    cba = _collect_codebook(cb, m, _pq_split(m))
-    codes = pq_assign(vectors, cb, m=m, arrays=cba).select("vec_id", "subspace", "code")
-    return codes, _pq_probe_lut(probes, cb, m, "vec_id", "embedding", arrays=cba)
+    cba = _collect_codebook(cb)
+    codes = pq_assign(vectors, cb, arrays=cba).select("vec_id", "subspace", "code")
+    return codes, _pq_probe_lut(probes, cb, "vec_id", "embedding", arrays=cba)
 
 
 def _ivf_pq_index(
-    vectors: DataFrame, probes: DataFrame, k_cells: int, m: int, k_centroids: int
+    vectors: DataFrame, probes: DataFrame
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """(cents, cell, codes, lut): the IVF-PQ index over ``vectors`` —
     seeded centroids, each vector's cell (vec_id, centroid_id), its PQ
     codes — and the ADC lookup table of ``probes``."""
-    cents = ivf_seed_centroids(vectors, k_cells)
+    cents = ivf_seed_centroids(vectors)
     cell = ivf_assign(vectors, cents).select("vec_id", "centroid_id")
-    codes, lut = _pq_codes_lut(vectors, probes, pq_codebook(vectors, m=m, k=k_centroids), m)
+    codes, lut = _pq_codes_lut(vectors, probes, pq_codebook(vectors))
     return cents, cell, codes, lut
 
 
-def ivf_pq_search(
-    vectors: DataFrame,
-    probes: DataFrame,
-    nprobe: int = 4,
-    k_cells: int = 16,
-    m: int = 8,
-    k_centroids: int = 16,
-) -> DataFrame:
+def ivf_pq_search(vectors: DataFrame, probes: DataFrame) -> DataFrame:
     """IVF-PQ top-10: the full billion-scale ANN index — coarse cell routing
     (IVF) composed with code-book distances (ADC over PQ codes).
 
-    Each query visits only its ``nprobe`` nearest cells, and within them
+    Each query visits only its ``NPROBE`` nearest cells, and within them
     distances come from narrow code rows + the broadcast probe LUT — the
     corpus's float vectors are touched exactly twice, both at INDEX BUILD
     (cell assignment + code assignment), never at search. At 100 TB the
     (cell, codes) table is stored partitioned by ``centroid_id``, so the
     probed-cell filter becomes partition pruning and a search touches
-    ~nprobe/k_cells of the files; the local plan plays the same
+    ~NPROBE/K_CELLS of the files; the local plan plays the same
     restriction as one broadcast hash join.
 
     Shuffle budget at search time: the codes⋈candidates join keyed on
@@ -1063,8 +1038,8 @@ def ivf_pq_search(
     the per-query top-k window. DECIMAL(20,4) partial sums keep results
     engine-exact.
     """
-    cents, cell, codes, lut = _ivf_pq_index(vectors, probes, k_cells, m, k_centroids)
-    qprobe = ivf_probe_cells(probes, cents, nprobe).select("query_id", "centroid_id")
+    cents, cell, codes, lut = _ivf_pq_index(vectors, probes)
+    qprobe = ivf_probe_cells(probes, cents, NPROBE).select("query_id", "centroid_id")
     cand = (
         cell.join(F.broadcast(qprobe), "centroid_id")
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -1079,14 +1054,7 @@ def ivf_pq_search(
     return _adc_rank(scored)
 
 
-def ivf_pq_residual_search(
-    vectors: DataFrame,
-    probes: DataFrame,
-    nprobe: int = 4,
-    k_cells: int = 16,
-    m: int = 8,
-    k_centroids: int = 16,
-) -> DataFrame:
+def ivf_pq_residual_search(vectors: DataFrame, probes: DataFrame) -> DataFrame:
     """IVF-PQ with RESIDUAL encoding — the index layout FAISS's IndexIVFPQ
     actually ships: PQ codes quantize each vector's residual v - c(cell)
     rather than the raw vector, so the codebook only has to cover the
@@ -1100,17 +1068,15 @@ def ivf_pq_residual_search(
     widened first — both exact IEEE ops); everything downstream is the
     standard PQ contract (sequential in-order distance sums, lowest-cid
     ties, round-4 decimal LUT partials). The per-(query, cell) LUT keys
-    pack as query_id * 1024 + centroid_id (k_cells < 1024 asserted) to
-    ride the shared probe-LUT kernel unchanged.
+    pack as query_id * 1024 + centroid_id (``K_CELLS`` < 1024) to ride
+    the shared probe-LUT kernel unchanged.
 
     Scale shape: identical to :func:`ivf_pq_search` — the corpus's float
     vectors are touched at index build only; search joins narrow code
     rows against a broadcast LUT that is merely nprobe x bigger. The one
     extra build cost is the residual projection, a broadcast map pass.
     """
-    if k_cells >= 1024:
-        raise ValueError("k_cells must stay < 1024 for the packed LUT key")
-    cents = ivf_seed_centroids(vectors, k_cells)
+    cents = ivf_seed_centroids(vectors)
     cell = ivf_assign(vectors, cents).select("vec_id", "centroid_id")
     cvecs = F.broadcast(
         cents.select(
@@ -1130,10 +1096,10 @@ def ivf_pq_residual_search(
             ).alias("rvec"),
         )
     )
-    cb = pq_codebook(rv, m=m, k=k_centroids, vec_col="rvec")
-    cba = _collect_codebook(cb, m, _pq_split(m))
-    codes = pq_assign(rv, cb, m=m, vec_col="rvec", arrays=cba).select("vec_id", "subspace", "code")
-    qprobe = ivf_probe_cells(probes, cents, nprobe).select("query_id", "centroid_id")
+    cb = pq_codebook(rv, vec_col="rvec")
+    cba = _collect_codebook(cb)
+    codes = pq_assign(rv, cb, vec_col="rvec", arrays=cba).select("vec_id", "subspace", "code")
+    qprobe = ivf_probe_cells(probes, cents, NPROBE).select("query_id", "centroid_id")
     qres = (
         probes.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q"))
         .join(F.broadcast(qprobe), "query_id")
@@ -1146,7 +1112,7 @@ def ivf_pq_residual_search(
         )
     )
     lut = (
-        _pq_probe_lut(qres, cb, m, "qc", "qrvec", arrays=cba)
+        _pq_probe_lut(qres, cb, "qc", "qrvec", arrays=cba)
         .select(
             F.expr("query_id div 1024").alias("query_id"),
             (F.col("query_id") % 1024).alias("centroid_id"),
@@ -1169,11 +1135,7 @@ def ivf_pq_residual_search(
     return _adc_rank(scored)
 
 
-def knn_graph(
-    vectors: DataFrame,
-    n_planes: int = 16,
-    dim: int = 64,
-) -> DataFrame:
+def knn_graph(vectors: DataFrame) -> DataFrame:
     """Approximate 5-nearest-neighbor GRAPH over the whole corpus:
     (vec_id, neighbor_id, cosine4, rank<=5) for every vector.
 
@@ -1186,7 +1148,7 @@ def knn_graph(
     sampling; at 100 TB the bucket prefix widens (more, smaller buckets)
     and the 100,000-row bucket cap bounds any hot region.
     """
-    sig = lsh_signatures(vectors, n_planes, dim)
+    sig = lsh_signatures(vectors, N_PLANES)
     sym = lsh_bucket_pairs(sig, directed=True).select(
         "id_a", "id_b"
     )
@@ -1228,8 +1190,8 @@ def knn_graph(
     )
 
 
-def random_projection(vectors: DataFrame, dim: int = 64) -> DataFrame:
-    """Johnson-Lindenstrauss random projection: dense ``dim``-d embeddings
+def random_projection(vectors: DataFrame) -> DataFrame:
+    """Johnson-Lindenstrauss random projection: dense ``DIM``-d embeddings
     down to 16 coordinates (y_j = dot(v, plane_j) / sqrt(16))
     using the same md5-derived plane matrix as the LSH signatures.
 
@@ -1238,10 +1200,10 @@ def random_projection(vectors: DataFrame, dim: int = 64) -> DataFrame:
     of full-width vectors won't fit the candidate stage. Deterministic
     planes mean two engines (and two runs) agree exactly.
     """
-    planes = hyperplanes(16, dim)
+    planes = hyperplanes(16)
     mat = F.array(*[F.array(*[F.lit(x) for x in plane]) for plane in planes])
     scale = 0.25  # 1 / sqrt(16)
-    vec = _checked_dim(F.col("embedding"), dim, "random_projection")
+    vec = _checked_dim(F.col("embedding"), "random_projection")
     proj = F.transform(mat, lambda plane: F.round(dot(vec, plane) * scale, 6))
     return vectors.select("vec_id", proj.alias("projected"))
 
@@ -1489,13 +1451,7 @@ def mmr_rerank(vectors: DataFrame, queries: DataFrame) -> DataFrame:
     )
 
 
-def ivf_pq_nprobe_curve(
-    vectors: DataFrame,
-    probes: DataFrame,
-    k_cells: int = 16,
-    m: int = 8,
-    k_centroids: int = 16,
-) -> DataFrame:
+def ivf_pq_nprobe_curve(vectors: DataFrame, probes: DataFrame) -> DataFrame:
     """IVF-PQ top-10 at the nprobe operating points 1, 2, 4 and 8 from ONE index
     build — how a real deployment sweeps the knob (the index is immutable;
     only the router's cell cutoff moves). Key identity: the candidate set
@@ -1512,7 +1468,7 @@ def ivf_pq_nprobe_curve(
     result contract of :func:`ivf_pq_search` with the operating point
     attached.
     """
-    cents, cell, codes, lut = _ivf_pq_index(vectors, probes, k_cells, m, k_centroids)
+    cents, cell, codes, lut = _ivf_pq_index(vectors, probes)
     qprobe = ivf_probe_cells(probes, cents, 8).select(
         "query_id", "centroid_id", F.col("rank").alias("prank")
     )

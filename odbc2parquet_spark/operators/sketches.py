@@ -25,13 +25,14 @@ from pyspark.sql import functions as F
 from odbc2parquet_spark.functions.hashing import HASH_DOMAIN, md5_long, md5_pair
 
 
-def kmv_distinct_estimate(df: DataFrame, col: str) -> DataFrame:
-    """One-row (k_used, kth_hash, estimate) KMV distinct-count sketch.
+def kmv_distinct_estimate(df: DataFrame) -> DataFrame:
+    """One-row (k_used, kth_hash, estimate) KMV distinct-count sketch of
+    ``o_custkey``.
 
     ``estimate`` is (k-1) * M / h_k with k = 256 when at least k distinct hashes exist,
     else the exact distinct count (small-cardinality regime).
     """
-    hashes = df.select(md5_long(F.col(col).cast("string")).alias("h")).distinct()
+    hashes = df.select(md5_long(F.col("o_custkey").cast("string")).alias("h")).distinct()
     smallest = hashes.orderBy("h").limit(256)
     return smallest.agg(
         F.count("*").alias("k_used"),
@@ -69,8 +70,8 @@ def _cms_cells(value: F.Column) -> F.Column:
     )
 
 
-def count_min_sketch(df: DataFrame, col: str) -> DataFrame:
-    """(row, col, n): a count-min sketch of the value stream — the
+def count_min_sketch(df: DataFrame) -> DataFrame:
+    """(row, col, n): a count-min sketch of the ``w`` stream — the
     fixed-size frequency summary that answers "roughly how often does X
     occur" over arbitrarily large streams with 4*256 counters.
 
@@ -81,7 +82,7 @@ def count_min_sketch(df: DataFrame, col: str) -> DataFrame:
     partials; the sketch is 4*256 rows regardless of stream size.
     """
     return (
-        df.select(F.explode(_cms_cells(F.col(col))).alias("c"))
+        df.select(F.explode(_cms_cells(F.col("w"))).alias("c"))
         .select(F.col("c.row").alias("row"), F.col("c.col").alias("col"))
         .groupBy("row", "col")
         .agg(F.count("*").alias("n"))
@@ -102,9 +103,9 @@ def cms_estimate(sketch: DataFrame, probes: DataFrame) -> DataFrame:
     )
 
 
-def kmv_distinct_per_group(df: DataFrame, group_cols: list[str], col: str) -> DataFrame:
-    """Per-group KMV distinct-count sketch: (group..., k_used, kth_hash,
-    estimate).
+def kmv_distinct_per_group(df: DataFrame) -> DataFrame:
+    """Per-``day`` KMV distinct-count sketch of ``user_id``: (day,
+    k_used, kth_hash, estimate).
 
     The per-window/per-segment form of :func:`kmv_distinct_estimate` —
     the scale substitute for ``COUNT(DISTINCT)`` per group when groups
@@ -114,10 +115,10 @@ def kmv_distinct_per_group(df: DataFrame, group_cols: list[str], col: str) -> Da
     group ships at most 64 longs to the estimate. Deterministic (md5-
     derived hashes), so two engines agree on the ESTIMATE itself.
     """
-    hashes = df.select(*group_cols, md5_long(F.col(col).cast("string")).alias("h")).distinct()
-    w = Window.partitionBy(*group_cols).orderBy("h")
+    hashes = df.select("day", md5_long(F.col("user_id").cast("string")).alias("h")).distinct()
+    w = Window.partitionBy("day").orderBy("h")
     smallest = hashes.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 64)
-    return smallest.groupBy(*group_cols).agg(
+    return smallest.groupBy("day").agg(
         F.count("*").alias("k_used"),
         F.max("h").alias("kth_hash"),
         F.when(F.count("*") < 64, F.count("*").cast("double"))
@@ -126,12 +127,9 @@ def kmv_distinct_per_group(df: DataFrame, group_cols: list[str], col: str) -> Da
     )
 
 
-def binned_quantiles(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-) -> DataFrame:
-    """Mergeable per-group quantile estimates from fixed-width value bins
+def binned_quantiles(df: DataFrame) -> DataFrame:
+    """Mergeable per-``event_type`` quantile estimates of ``value`` from
+    fixed-width bins
     — the deterministic scale substitute for exact per-group percentile
     sorts (and for t-digest, whose merge order is nondeterministic).
 
@@ -142,15 +140,15 @@ def binned_quantiles(
     running count reaches ceil(q * n) — a value guaranteed within one bin width of the true
     quantile. Rows per group shipped: |bins|, regardless of corpus size.
     """
-    bin_col = F.floor(F.col(value_col) / F.lit(0.01)).cast("long")
+    bin_col = F.floor(F.col("value") / F.lit(0.01)).cast("long")
     counts = (
-        df.select(*group_cols, bin_col.alias("bin"))
-        .groupBy(*group_cols, "bin")
+        df.select("event_type", bin_col.alias("bin"))
+        .groupBy("event_type", "bin")
         .agg(F.count("*").alias("c"))
     )
-    w = Window.partitionBy(*group_cols).orderBy("bin")
+    w = Window.partitionBy("event_type").orderBy("bin")
     cum = counts.withColumn("cum", F.sum("c").over(w)).withColumn(
-        "total", F.sum("c").over(Window.partitionBy(*group_cols))
+        "total", F.sum("c").over(Window.partitionBy("event_type"))
     )
     aggs = []
     for q in (0.5, 0.95, 0.99):
@@ -160,14 +158,14 @@ def binned_quantiles(
         aggs.append(
             F.round((F.min(qualifying) + 1) * F.lit(0.01), 6).alias(name)
         )
-    return cum.groupBy(*group_cols).agg(
+    return cum.groupBy("event_type").agg(
         F.max("total").cast("long").alias("n"), *aggs
     )
 
 
-def hll_distinct_per_group(df: DataFrame, group_cols: list[str], col: str) -> DataFrame:
-    """Per-group HyperLogLog distinct-count sketch: (group..., m,
-    zero_regs, estimate).
+def hll_distinct_per_group(df: DataFrame) -> DataFrame:
+    """Per-``day`` HyperLogLog distinct-count sketch of ``user_id``: (day,
+    m, zero_regs, estimate).
 
     The register-array sibling of :func:`kmv_distinct_per_group`
     (Flajolet et al. 2007): split the 60-bit md5 hash into an 8-bit
@@ -194,21 +192,21 @@ def hll_distinct_per_group(df: DataFrame, group_cols: list[str], col: str) -> Da
     (the property KMV's top-k also has, but HLL keeps fixed m-row state
     per group instead of k sorted hashes).
     """
-    regs = hll_registers(df, group_cols, col)
-    return hll_estimate_from_registers(regs, group_cols)
+    regs = hll_registers(df, ["day"])
+    return hll_estimate_from_registers(regs, ["day"])
 
 
-def hll_registers(df: DataFrame, group_cols: list[str], col: str) -> DataFrame:
-    """(group..., reg, mrho): the raw per-group HLL register rows — the
-    MERGEABLE form. Registers combine by MAX, so coarser groups (weekly
-    from daily, global from per-shard) re-aggregate these <= 256 rows
-    per group WITHOUT rescanning data; :func:`hll_estimate_from_registers`
-    turns any (re-)aggregated register set back into an estimate that
-    still hash-matches an engine computing the coarse sketch directly
-    (MAX associativity)."""
+def hll_registers(df: DataFrame, group_cols: list[str]) -> DataFrame:
+    """(group..., reg, mrho): the raw per-group HLL register rows of
+    ``user_id`` — the MERGEABLE form. Registers combine by MAX, so coarser
+    groups (weekly from daily, global from per-shard) re-aggregate these <=
+    256 rows per group WITHOUT rescanning data;
+    :func:`hll_estimate_from_registers` turns any (re-)aggregated register
+    set back into an estimate that still hash-matches an engine computing
+    the coarse sketch directly (MAX associativity)."""
     m = 256
     suffix_bits = 52
-    h = md5_long(F.col(col).cast("string"))
+    h = md5_long(F.col("user_id").cast("string"))
     idx = h.bitwiseAND(F.lit(m - 1))
     rest = F.shiftright(h, 8)
     rho = (
@@ -256,8 +254,9 @@ def hll_estimate_from_registers(regs: DataFrame, group_cols: list[str]) -> DataF
     )
 
 
-def kmv_overlap_estimate(df_a: DataFrame, col_a: str, df_b: DataFrame, col_b: str) -> DataFrame:
-    """One-row estimate of |A ∩ B| distinct keys from two KMV sketches —
+def kmv_overlap_estimate(df_a: DataFrame, df_b: DataFrame) -> DataFrame:
+    """One-row estimate of |A ∩ B| distinct keys (A the ``c_custkey`` of
+    ``df_a``, B the ``o_custkey`` of ``df_b``) from two KMV sketches —
     the sketch-algebra answer to "how big is this join's key overlap"
     WITHOUT scanning either side twice (Beyer et al. 2007): the k = 256
     smallest hashes of A ∪ B are exactly the k smallest of (K_a ∪ K_b),
@@ -275,10 +274,12 @@ def kmv_overlap_estimate(df_a: DataFrame, col_a: str, df_b: DataFrame, col_b: st
     retained (which HLL cannot answer).
     """
     ha = (
-        df_a.select(md5_long(F.col(col_a).cast("string")).alias("h")).distinct().orderBy("h").limit(256)
+        df_a.select(md5_long(F.col("c_custkey").cast("string")).alias("h"))
+        .distinct().orderBy("h").limit(256)
     )
     hb = (
-        df_b.select(md5_long(F.col(col_b).cast("string")).alias("h")).distinct().orderBy("h").limit(256)
+        df_b.select(md5_long(F.col("o_custkey").cast("string")).alias("h"))
+        .distinct().orderBy("h").limit(256)
     )
     union_k = ha.unionAll(hb).distinct().orderBy("h").limit(256)
     both = ha.intersect(hb)  # hashes in K_a ∩ K_b

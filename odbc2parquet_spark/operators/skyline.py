@@ -15,7 +15,7 @@ family, operators/bucketing.py):
 2. collapse to the distinct-x table ``(bucket, x, ymax)`` — a map-side
    combinable groupBy, after which all skyline logic runs on DISTINCT x
    values, not rows;
-3. pass 1: per-bucket max(ymax) -> driver (num_buckets longs, never
+3. pass 1: per-bucket max(ymax) -> driver (32 longs, never
    data), folded into EXCLUSIVE prefix maxima per bucket;
 4. pass 2: within each bucket a window ordered by x takes the running
    max over strictly-preceding distinct-x rows; combined with the bucket
@@ -38,26 +38,22 @@ from pyspark.sql import functions as F
 from odbc2parquet_spark.operators.bucketing import order_bucket_col
 
 
-def skyline_2d(
-    df: DataFrame,
-    min_col: str,
-    max_col: str,
-) -> DataFrame:
-    """Rows of ``df`` on the Pareto frontier of (minimize ``min_col``,
-    maximize ``max_col``). Returns the input columns unchanged; duplicate
+def skyline_2d(df: DataFrame) -> DataFrame:
+    """Rows of ``df`` on the Pareto frontier of (minimize ``p_retailprice``,
+    maximize ``p_size``). Returns the input columns unchanged; duplicate
     frontier rows (equal x and y) are all kept. NULLs in either column are
     excluded (three-valued dominance is undefined for them).
     """
-    src = df.filter(F.col(min_col).isNotNull() & F.col(max_col).isNotNull())
+    src = df.filter(F.col("p_retailprice").isNotNull() & F.col("p_size").isNotNull())
     with_pid = src.withColumn(
-        "_pid_", order_bucket_col(src, min_col, 32)
+        "_pid_", order_bucket_col(src, "p_retailprice")
     )
-    per_x = with_pid.groupBy("_pid_", min_col).agg(
-        F.max(max_col).alias("_ymax_")
+    per_x = with_pid.groupBy("_pid_", "p_retailprice").agg(
+        F.max("p_size").alias("_ymax_")
     )
 
     # pass 1: per-bucket maxima -> exclusive prefix maxima (driver sees
-    # num_buckets values only)
+    # 32 values only)
     bucket_rows = per_x.groupBy("_pid_").agg(F.max("_ymax_").alias("m")).collect()
     if not bucket_rows:
         return src.limit(0)
@@ -78,7 +74,7 @@ def skyline_2d(
     # pass 2: bucket-local running max over strictly-smaller distinct x
     wl = (
         Window.partitionBy("_pid_")
-        .orderBy(min_col)
+        .orderBy("p_retailprice")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     frontier = (
@@ -86,12 +82,12 @@ def skyline_2d(
         .join(offset_df, "_pid_")
         .withColumn("_prev_", F.greatest("_run_", "_pmax_"))
         .filter(F.col("_prev_").isNull() | (F.col("_ymax_") > F.col("_prev_")))
-        .select(min_col, "_ymax_")
+        .select("p_retailprice", "_ymax_")
     )
 
     # rows join back: keep every row attaining its x's frontier ymax
     return (
-        src.join(F.broadcast(frontier), on=min_col)
-        .filter(F.col(max_col) == F.col("_ymax_"))
+        src.join(F.broadcast(frontier), on="p_retailprice")
+        .filter(F.col("p_size") == F.col("_ymax_"))
         .drop("_ymax_")
     )

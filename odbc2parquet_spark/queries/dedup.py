@@ -190,7 +190,7 @@ def dd_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs 3-word-shingle Jaccard on a bounded slice (quadratic —
     the verification operator, not the scale path; see dd_minhash_lsh)."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return D.jaccard_pairs(D.word_shingles(docs), threshold=0.5)
+    return D.jaccard_pairs(D.word_shingles(docs))
 
 
 @query(
@@ -347,7 +347,7 @@ def dd_simhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     ALL pairs on this corpus — a threshold that loose makes any method
     output-bound)."""
     docs = load_table(spark, sf_dir, "documents")
-    return D.simhash_banded_pairs(D.simhash(docs), max_hamming=3, bands=4)
+    return D.simhash_banded_pairs(D.simhash(docs))
 
 
 @query(
@@ -389,9 +389,7 @@ def dd_simhash_banded_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     n = docs.count()
     bb = derived_prefix_bits(n, max_bits=15)
-    pairs = D.simhash_banded_pairs(
-        D.simhash(docs, bits=60), max_hamming=3, bits=4 * bb, bands=4
-    )
+    pairs = D.simhash_banded_pairs(D.simhash(docs, bits=60), bits=4 * bb)
     return pairs.withColumn("band_bits", F.lit(bb))
 
 
@@ -936,7 +934,7 @@ def dd_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     VERIFICATION operator (oracle-scale only); the banding side is the
     linear scale path whose recall this certifies."""
     sh = D.word_shingles(docs := load_table(spark, sf_dir, "documents"))
-    truth = D.jaccard_pairs(sh, threshold=0.5).select("id_a", "id_b")
+    truth = D.jaccard_pairs(sh).select("id_a", "id_b")
     sig = D.minhash_signatures(D.word_shingle_stream(docs))
     cand = D.lsh_candidate_pairs(sig).select(
         "id_a", "id_b"
@@ -1050,9 +1048,9 @@ def dd_boundary_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _prefix_jaccard_sql(num: int, den: int) -> str:
+def _prefix_jaccard_sql(num: int) -> str:
     """Prefix-filtered self-join of ``shh`` (id, gh: the distinct hashed
-    grams of each set) at Jaccard threshold t = num/den: df-ordered prefix,
+    grams of each set) at Jaccard threshold t = num/5: df-ordered prefix,
     size and positional filters, exact overlap, then the pairs at
     Jaccard >= t."""
     return f"""
@@ -1064,14 +1062,14 @@ def _prefix_jaccard_sql(num: int, den: int) -> str:
         FROM shh JOIN dftab USING (gh)
     ),
     prefix AS (
-        SELECT id, gh, sz, rn FROM sized WHERE rn <= sz - ({num} * sz + {den - 1}) // {den} + 1
+        SELECT id, gh, sz, rn FROM sized WHERE rn <= sz - ({num} * sz + 4) // 5 + 1
     ),
     cand AS (
         SELECT DISTINCT a.id AS id_a, b.id AS id_b
         FROM prefix a JOIN prefix b ON a.gh = b.gh AND a.id < b.id
-        WHERE {den} * b.sz >= {num} * a.sz AND {den} * a.sz >= {num} * b.sz
+        WHERE 5 * b.sz >= {num} * a.sz AND 5 * a.sz >= {num} * b.sz
           AND 1 + LEAST(a.sz - a.rn, b.sz - b.rn)
-              >= ({num} * (a.sz + b.sz) + {num + den - 1}) // {num + den}
+              >= ({num} * (a.sz + b.sz) + {num + 4}) // {num + 5}
     ),
     inter AS (
         SELECT c.id_a, c.id_b, COUNT(*) AS n_inter
@@ -1087,7 +1085,7 @@ def _prefix_jaccard_sql(num: int, den: int) -> str:
     FROM inter i
     JOIN szs sa ON sa.id = i.id_a
     JOIN szs sb ON sb.id = i.id_b
-    WHERE ROUND(CAST(n_inter AS DOUBLE) / (sa.sz + sb.sz - n_inter), 6) >= {num / den}
+    WHERE ROUND(CAST(n_inter AS DOUBLE) / (sa.sz + sb.sz - n_inter), 6) >= {num / 5}
     """
 
 
@@ -1101,7 +1099,7 @@ def _prefix_jaccard_sql(num: int, den: int) -> str:
                CAST('0x' || substring(md5(g), 1, 15) AS BIGINT) AS gh
         FROM sh
     ),"""
-    + _prefix_jaccard_sql(3, 5),
+    + _prefix_jaccard_sql(3),
 )
 def dd_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-word-shingle Jaccard >= 0.6 self-join by prefix filtering
@@ -1418,7 +1416,7 @@ def dd_band_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # FIVE times (four left-semi probes + the n_true count) — persist it
     # so it evaluates once (measured 6.8s -> its recompute share at sf0.1)
     truth = cachereg.track(
-        D.jaccard_pairs(sh, threshold=0.5).select("id_a", "id_b").persist()
+        D.jaccard_pairs(sh).select("id_a", "id_b").persist()
     )
     sig = D.minhash_signatures(D.word_shingle_stream(docs))
     n_true = truth.agg(F.count("*").cast("long").alias("n_true"))
@@ -1433,7 +1431,7 @@ def dd_band_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # zero candidates now produces no row — exactly the oracle's GROUP
     # BY semantics (the old per-config agg emitted an n_cand=0 row that
     # the oracle never would).
-    cand = D.lsh_candidate_pairs_multi(sig, [(8, 1), (4, 2), (2, 4), (1, 8)])
+    cand = D.lsh_candidate_pairs_multi(sig)
     per = (
         cand.join(truth.withColumn("_t_", F.lit(1)), ["id_a", "id_b"], "left")
         .groupBy("cfg")
@@ -1583,9 +1581,7 @@ def dd_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     join of two bounded pair sets, three counts."""
     docs = load_table(spark, sf_dir, "documents")
     mh = D.minhash_near_duplicates(docs).select("id_a", "id_b")
-    sh = D.simhash_banded_pairs(
-        D.simhash(docs), max_hamming=3, bands=4
-    ).select("id_a", "id_b")
+    sh = D.simhash_banded_pairs(D.simhash(docs)).select("id_a", "id_b")
     u = mh.withColumn("in_m", F.lit(True)).join(
         sh.withColumn("in_s", F.lit(True)), ["id_a", "id_b"], "full_outer"
     )

@@ -130,9 +130,7 @@ def _asof_purchase(spark: SparkSession, sf_dir: str, direction: str) -> DataFram
         .groupBy("user_id", "ts")
         .agg(F.max("value").alias("purchase_value"))
     )
-    out = asof_join(
-        clicks, purchases, key="user_id", left_ts="ts", right_ts="ts", direction=direction
-    )
+    out = asof_join(clicks, purchases, direction=direction)
     return out.select(
         "event_id",
         "user_id",
@@ -184,7 +182,7 @@ def ev_range_join_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "value")
     bands = spark.createDataFrame(_bands(), ["band_id", "lo", "hi"])
-    out = range_join(ev, bands, "value", "lo", "hi", bin_width=50.0)
+    out = range_join(ev, bands)
     return out.select("event_id", "band_id", "value")
 
 
@@ -380,7 +378,7 @@ def ev_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     buys = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
-    j = stream_stream_interval_join(views, buys, key="user_id")
+    j = stream_stream_interval_join(views, buys)
     return j.select(
         F.col("l_key").alias("user_id"),
         F.col("l_event_id").alias("l_event"),
@@ -429,7 +427,7 @@ def ev_rolling_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     return (
-        rolling_trend(ev, "user_id", ["ts", "event_id"], "value")
+        rolling_trend(ev)
         .filter(F.col("event_id") % 97 == 0)
         .select("user_id", "event_id", "n_window", "slope")
     )
@@ -469,7 +467,7 @@ def ev_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.quality import mad_outliers
 
     ev = load_table(spark, sf_dir, "events")
-    flagged = mad_outliers(ev, "value", "event_type")
+    flagged = mad_outliers(ev)
     return (
         flagged.groupBy("event_type", "med", "mad")
         .agg(
@@ -533,9 +531,7 @@ def ev_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     proxy = ev.select(
         F.unix_seconds(F.col("ts").cast("timestamp")).alias("t_proxy")
     )
-    run = sweep_line_concurrency(
-        sess, "s", "e", boundary_source=(proxy, "t_proxy")
-    )
+    run = sweep_line_concurrency(sess, boundary_source=(proxy, "t_proxy"))
     return (
         run.groupBy(
             (F.floor(F.col("t") / 86400) * 86400).cast("long").alias("day_start")
@@ -619,7 +615,7 @@ def ev_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("spend")
     )
-    a = ab_assign(users, "user_id")
+    a = ab_assign(users)
     spend = F.col("spend")
     agg = a.agg(
         F.sum((F.col("variant") == "A").cast("long")).alias("n_a"),
@@ -815,7 +811,7 @@ def ev_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.quality import winsorize
 
     ev = load_table(spark, sf_dir, "events")
-    w = winsorize(ev, "value", "event_type")
+    w = winsorize(ev)
     return (
         w.groupBy("event_type", "p_lo", "p_hi")
         .agg(
@@ -893,7 +889,7 @@ def ev_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     tch = ev.filter(F.col("event_type").isin("click", "view", "signup")).select(
         "user_id", "ts", F.col("event_type").alias("channel")
     )
-    per = linear_attribution(conv, tch, key="user_id")
+    per = linear_attribution(conv, tch)
     return (
         per.groupBy("channel")
         .agg(
@@ -1045,7 +1041,7 @@ def ev_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     dim = spark.createDataFrame(_TYPE_WEIGHTS, ["event_type", "weight"])
-    j = salted_join(ev, dim, "event_type", distribute_by="event_id")
+    j = salted_join(ev, dim)
     return j.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum((F.col("value") * F.col("weight")).cast("decimal(18,6)"))
@@ -1105,7 +1101,7 @@ def ev_kmv_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     day = _epoch_day()
-    return kmv_distinct_per_group(ev.select(day.alias("day"), "user_id"), ["day"], "user_id")
+    return kmv_distinct_per_group(ev.select(day.alias("day"), "user_id"))
 
 
 @query(
@@ -1149,9 +1145,7 @@ def ev_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(":"),
         F.lpad(F.col("event_id").cast("string"), 12, "0"),
     )
-    return late_event_audit(
-        ev.withColumn("arrival", arrival), order_col="arrival"
-    )
+    return late_event_audit(ev.withColumn("arrival", arrival))
 
 
 @query(
@@ -1183,7 +1177,7 @@ def ev_binned_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.sketches import binned_quantiles
 
     ev = load_table(spark, sf_dir, "events")
-    return binned_quantiles(ev, ["event_type"], "value")
+    return binned_quantiles(ev)
 
 
 @query(
@@ -1353,7 +1347,7 @@ def ev_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.joins import skew_profile
 
     ev = load_table(spark, sf_dir, "events")
-    return skew_profile(ev, "user_id")
+    return skew_profile(ev)
 
 
 @query(
@@ -1389,8 +1383,8 @@ def ev_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     fresh = ev2.filter(F.to_date("day") >= F.col("c")).drop("c")
     keys = ["day", "event_type"]
     merged = merge_agg_states(
-        partial_agg_state(hist, keys, "value"),
-        partial_agg_state(fresh, keys, "value"),
+        partial_agg_state(hist, keys),
+        partial_agg_state(fresh, keys),
         keys,
     )
     return merged.select(
@@ -1530,7 +1524,7 @@ def ev_ewma_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     return (
-        ewma_last_n(ev, "user_id", ["ts", "event_id"], "value")
+        ewma_last_n(ev)
         .filter(F.col("event_id") % 97 == 0)
         .select("user_id", "event_id", "ewma")
     )
@@ -1595,9 +1589,7 @@ def ev_hll_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     day = _epoch_day()
-    return hll_distinct_per_group(
-        ev.select(day.alias("day"), "user_id"), ["day"], "user_id"
-    )
+    return hll_distinct_per_group(ev.select(day.alias("day"), "user_id"))
 
 
 @query(
@@ -1631,7 +1623,7 @@ def ev_purged_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
-    return purged_time_split(ev.select(us.alias("us")), "us")
+    return purged_time_split(ev.select(us.alias("us")))
 
 
 @query(
@@ -1654,8 +1646,7 @@ def ev_hll_weekly_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     day = _epoch_day()
     week = F.floor(day / F.lit(7)).cast("long")
     daily = hll_registers(
-        ev.select(week.alias("week"), day.alias("day"), "user_id"),
-        ["week", "day"], "user_id",
+        ev.select(week.alias("week"), day.alias("day"), "user_id"), ["week", "day"]
     )
     weekly = daily.groupBy("week", "reg").agg(F.max("mrho").alias("mrho"))
     return hll_estimate_from_registers(weekly, ["week"])
@@ -1690,9 +1681,7 @@ def ev_hll_cumulative(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves (ev_hll_weekly_users), applied cumulatively."""
     ev = load_table(spark, sf_dir, "events")
     day = _epoch_day()
-    regs = hll_registers(
-        ev.select(day.alias("day"), "user_id"), ["day"], "user_id"
-    )
+    regs = hll_registers(ev.select(day.alias("day"), "user_id"), ["day"])
     # DENSIFY first: a register touched on day d but not day d+1 has no
     # (d+1, reg) row, and a row-less register cannot be carried forward
     # by any window — the calendar x 2^p grid (days * 256 rows, bounded
@@ -2272,12 +2261,7 @@ def ev_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     tch = ev.filter(
         F.col("event_type").isin("click", "error", "signup", "view")
     ).select("user_id", "ts", F.col("event_type").alias("channel"))
-    return shapley_attribution(
-        conv,
-        tch,
-        key="user_id",
-        channels=["click", "error", "signup", "view"],
-    )
+    return shapley_attribution(conv, tch)
 
 
 # shared oracle CTEs: conversion journeys (each purchase closes one) and

@@ -86,9 +86,7 @@ def ev_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison; summing the terms (the index itself) is an exact decimal
     fold the caller does over 10 rows."""
     ev = load_table(spark, sf_dir, "events")
-    return psi_drift(
-        ev, "value", F.col("event_type") == "purchase"
-    ).orderBy("bin")
+    return psi_drift(ev, F.col("event_type") == "purchase").orderBy("bin")
 
 
 @query(
@@ -131,7 +129,7 @@ def ev_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("view", "purchase")
     )
-    return ks_two_sample(ev, "value", F.col("event_type") == "purchase")
+    return ks_two_sample(ev, F.col("event_type") == "purchase")
 
 
 @query(
@@ -174,7 +172,7 @@ def ev_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("view", "purchase")
     )
-    return rank_auc(ev, "value", F.col("event_type") == "purchase")
+    return rank_auc(ev, F.col("event_type") == "purchase")
 
 
 @query(
@@ -224,7 +222,7 @@ def q_gini_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("v")
     )
-    g = gini_concentration(rev, "v")
+    g = gini_concentration(rev)
     return g.select(
         "n",
         F.col("total").cast("double").alias("total"),
@@ -276,7 +274,7 @@ def q_chi_square_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells still contribute their expectation); per-cell terms round to 6
     then sum as DECIMAL so the statistic is order-independent."""
     orders = load_table(spark, sf_dir, "orders")
-    return chi_square_independence(orders, "o_orderpriority", "o_orderstatus")
+    return chi_square_independence(orders)
 
 
 #: each embedding component as the exact integer of its 6-decimal value
@@ -337,7 +335,7 @@ def sim_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical integers; covariance_matrix_decimal is the pure-Catalyst
     twin, equality-tested in tests/test_drift.py."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return covariance_matrix(emb, dim=64).orderBy("i", "j")
+    return covariance_matrix(emb).orderBy("i", "j")
 
 
 @query(
@@ -388,7 +386,7 @@ def sim_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     float steps land on identical doubles before ROUND. Zero-variance
     dims emit NULL via the same CASE on both engines."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return correlation_matrix(emb, dim=64).orderBy("i", "j")
+    return correlation_matrix(emb).orderBy("i", "j")
 
 
 @query(
@@ -437,7 +435,7 @@ def ev_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the end. Per-group windows span days-per-type — bounded by the
     calendar, never data-sized."""
     ev = load_table(spark, sf_dir, "events")
-    return cusum_changepoint(ev, "ts", "value", "event_type").orderBy("event_type")
+    return cusum_changepoint(ev).orderBy("event_type")
 
 
 @query(
@@ -750,9 +748,7 @@ def ev_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.drift import acf_daily
 
     ev = load_table(spark, sf_dir, "events")
-    return acf_daily(ev, "ts", "event_type").withColumnRenamed(
-        "g", "event_type"
-    )
+    return acf_daily(ev).withColumnRenamed("g", "event_type")
 
 
 @query(
@@ -801,9 +797,7 @@ def ev_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.drift import theil_sen_daily
 
     ev = load_table(spark, sf_dir, "events")
-    return theil_sen_daily(ev, "ts", "event_type").withColumnRenamed(
-        "g", "event_type"
-    )
+    return theil_sen_daily(ev).withColumnRenamed("g", "event_type")
 
 
 def _pca_iter_sql(k: int) -> str:

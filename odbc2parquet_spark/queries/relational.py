@@ -704,7 +704,7 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.sketches import kmv_distinct_estimate
 
     o = load_table(spark, sf_dir, "orders")
-    return kmv_distinct_estimate(o, "o_custkey")
+    return kmv_distinct_estimate(o)
 
 
 @query(
@@ -1198,16 +1198,7 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("tok", F.expr("substring(c_name, 10, 9)"))
     )
-    return deletion_blocked_fuzzy_match(
-        probes,
-        cust,
-        token_col="tok",
-        text_col="c_name",
-        probe_id="c_custkey",
-        master_id="c_custkey",
-        token_len=9,
-        block_col="c_nationkey",
-    )
+    return deletion_blocked_fuzzy_match(probes, cust)
 
 
 def _zorder_oracle() -> str:
@@ -1252,7 +1243,7 @@ def q_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(F.to_date("l_shipdate"), F.to_date(F.lit("1995-01-01"))).alias("x"),
         F.col("l_partkey").alias("y"),
     )
-    return zorder_bucket_stats(li, "x", "y")
+    return zorder_bucket_stats(li)
 
 
 @query(
@@ -1309,12 +1300,12 @@ def q_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     rules = [
-        Q.not_null("l_orderkey"),
+        Q.Rule("not_null", "l_orderkey"),
         Q.in_range("l_discount", 0.0, 0.05),
         Q.in_range("l_quantity", 1.0, 50.0),
-        Q.matches("l_returnflag", "^[ARN]$"),
+        Q.Rule("matches", "l_returnflag", pattern="^[ARN]$"),
         Q.unique("l_orderkey", "l_linenumber"),
-        Q.ref_integrity("l_orderkey", orders, "o_orderkey"),
+        Q.ref_integrity(orders),
     ]
     return Q.dq_check(li, rules)
 
@@ -1341,7 +1332,7 @@ def q_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
-    return bloom_semi_join(orders, cust, "o_custkey", "c_custkey")
+    return bloom_semi_join(orders, cust)
 
 
 @query(
@@ -1373,9 +1364,7 @@ def q_nest_order_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"
     )
-    nested = nest_children(
-        li, "l_orderkey", ["l_linenumber", "l_partkey", "l_suppkey"], "lines"
-    )
+    nested = nest_children(li)
     return nested.select(
         F.col("l_orderkey").alias("o_key"),
         F.size("lines").cast("long").alias("n_lines"),
@@ -1415,7 +1404,7 @@ def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.quality import k_anonymity_audit
 
     cust = load_table(spark, sf_dir, "customer")
-    return k_anonymity_audit(cust, ["c_nationkey", "c_mktsegment"], k=8)
+    return k_anonymity_audit(cust)
 
 
 @query(
@@ -1490,7 +1479,7 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.drift import weighted_median
 
     li = load_table(spark, sf_dir, "lineitem")
-    return weighted_median(li, "l_extendedprice", "l_quantity")
+    return weighted_median(li)
 
 
 @query(
@@ -1521,7 +1510,7 @@ def q_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.skyline import skyline_2d
 
     part = load_table(spark, sf_dir, "part")
-    sky = skyline_2d(part, "p_retailprice", "p_size")
+    sky = skyline_2d(part)
     return sky.select(
         F.col("p_partkey").alias("part_key"),
         F.col("p_retailprice").alias("price"),
@@ -1562,7 +1551,7 @@ def q_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders")
     return (
-        target_encode_loo(orders, "o_orderpriority", "o_totalprice")
+        target_encode_loo(orders)
         .filter(F.col("o_orderkey") % 97 == 0)
         .select("o_orderkey", "o_orderpriority", "enc_loo")
     )
@@ -1616,7 +1605,7 @@ def q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
-    return kmv_overlap_estimate(cust, "c_custkey", orders, "o_custkey")
+    return kmv_overlap_estimate(cust, orders)
 
 
 @query(
@@ -1638,7 +1627,7 @@ def q_exact_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.selection import exact_median
 
     li = load_table(spark, sf_dir, "lineitem")
-    out = exact_median(li, "l_extendedprice")
+    out = exact_median(li)
     return out.select("n_rows", F.round(F.col("median"), 6).alias("median"))
 
 
@@ -1774,9 +1763,7 @@ def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("c_acctbal") < 4500, F.lit("mid"))
         .otherwise(F.lit("high")),
     )
-    return l_diversity_audit(
-        cust, ["c_nationkey", "c_mktsegment"], "sens", l=3
-    )
+    return l_diversity_audit(cust)
 
 
 @query(

@@ -17,8 +17,6 @@ from odbc2parquet_spark.functions.hashing import md5_long
 from odbc2parquet_spark.operators import similarity as S
 from odbc2parquet_spark.queries import query
 
-_N_PLANES = 16
-_DIM = 64
 
 
 def _graph_memo(spark: SparkSession, name: str, sf_dir: str, build) -> DataFrame:
@@ -50,7 +48,7 @@ def _lsh_graph_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
-        sig = S.lsh_signatures(emb, _N_PLANES, _DIM)
+        sig = S.lsh_signatures(emb, S.N_PLANES)
         return S.lsh_bucket_pairs(sig).select("id_a", "id_b")
 
     return _graph_memo(spark, "lsh_graph_pairs", sf_dir, build)
@@ -125,7 +123,7 @@ def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _planes_sql(n_planes: int = None) -> list[str]:
-    planes = S.hyperplanes(n_planes or _N_PLANES, _DIM)
+    planes = S.hyperplanes(n_planes or S.N_PLANES)
     return ["[" + ", ".join(repr(x) for x in row) + "]" for row in planes]
 
 
@@ -182,30 +180,16 @@ def sim_lsh_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit random-hyperplane signatures — one projection pass, no
     shuffle; the index build of the ANN scale path."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return S.lsh_signatures(emb, _N_PLANES, _DIM)
-
-
-_K_CELLS = 16
-_NPROBE = 4
-
-#: PQ operating point, chosen by a measured recall sweep at sf0.1
-#: (round 7): 2-dim subspaces with 256 deterministic seed codewords.
-#: m=8/k=16 scored recall@10 = 0.20-0.30 — unusable; m=32/k=256 scores
-#: 0.72 seeded and ~0.8 Lloyd-refined, with the IVF cell-routing
-#: ceiling measured at 0.99 (nprobe=4), so code distortion is the only
-#: recall lever that matters here.
-_PQ_M = 32
-_PQ_SUB = 2
-_PQ_K = 256
+    return S.lsh_signatures(emb, S.N_PLANES)
 
 
 def _centroids_cte(where: str) -> str:
-    """``cent``: the first ``_K_CELLS`` embeddings of those ``where``
+    """``cent``: the first ``S.K_CELLS`` embeddings of those ``where``
     keeps, as IVF centroids; ``nc``: each with its squared norm ``csq``."""
     return f"""
     cent AS (
         SELECT vec_id AS centroid_id, embedding AS centroid
-        FROM embeddings{where} ORDER BY vec_id LIMIT {_K_CELLS}
+        FROM embeddings{where} ORDER BY vec_id LIMIT {S.K_CELLS}
     ),
     nc AS (
         SELECT centroid_id, centroid,
@@ -259,7 +243,7 @@ def sim_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector — broadcast-map pass, corpus never shuffles; at scale this
     column becomes the disk partitioning for partition-pruned probes."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return S.ivf_assign(emb, S.ivf_seed_centroids(emb, _K_CELLS))
+    return S.ivf_assign(emb, S.ivf_seed_centroids(emb))
 
 
 @query(
@@ -297,10 +281,10 @@ def sim_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     (O(N x k), no pairwise pass); see operators/similarity.ivf_silhouette
     for determinism + scale shape."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return S.ivf_silhouette(emb, S.ivf_seed_centroids(emb, _K_CELLS))
+    return S.ivf_silhouette(emb, S.ivf_seed_centroids(emb))
 
 
-def _qprobe_cte(nprobe: int = _NPROBE) -> str:
+def _qprobe_cte(nprobe: int = S.NPROBE) -> str:
     """``qprobe``: the ``nprobe`` cells nearest each of the first 10 vectors."""
     return f"""
     qprobe AS (
@@ -353,10 +337,8 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN scale path where the corpus is too big even for LSH all-bucket
     pairing."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cent = S.ivf_seed_centroids(emb, _K_CELLS)
-    return S.ivf_search(
-        emb, emb.filter(F.col("vec_id") < 10), cent, nprobe=_NPROBE
-    )
+    cent = S.ivf_seed_centroids(emb)
+    return S.ivf_search(emb, emb.filter(F.col("vec_id") < 10), cent)
 
 
 # Benched for the uncached LSH edge build: the graph family (sim_pagerank,
@@ -376,7 +358,7 @@ def sim_lsh_bucket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN candidate pairs sharing an 8-bit signature-prefix bucket — the
     equi-join that replaces the cross join at scale."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return S.lsh_bucket_pairs(S.lsh_signatures(emb, _N_PLANES, _DIM))
+    return S.lsh_bucket_pairs(S.lsh_signatures(emb, S.N_PLANES))
 
 
 @query(
@@ -417,12 +399,12 @@ def sim_lsh_auto_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
     pairs = S.lsh_bucket_pairs(
-        S.lsh_signatures(emb, _N_PLANES, _DIM),
+        S.lsh_signatures(emb, S.N_PLANES),
         target_occupancy=64,
         n_vectors=n,
-        max_prefix_bits=_N_PLANES,
+        max_prefix_bits=S.N_PLANES,
     )
-    bits = S.derived_prefix_bits(n, max_bits=_N_PLANES)
+    bits = S.derived_prefix_bits(n, max_bits=S.N_PLANES)
     return pairs.withColumn("prefix_bits", F.lit(bits))
 
 
@@ -585,17 +567,17 @@ def sim_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
     oracle=f"""
     WITH seeds AS (
-        SELECT vec_id AS cid, embedding FROM embeddings ORDER BY vec_id LIMIT {_PQ_K}
+        SELECT vec_id AS cid, embedding FROM embeddings ORDER BY vec_id LIMIT {S.PQ_K}
     ),
     sub AS (
         SELECT vec_id, CAST(t.s AS INTEGER) AS subspace,
-               list_slice(embedding, s * {_PQ_SUB} + 1, s * {_PQ_SUB} + {_PQ_SUB}) AS v8
-        FROM embeddings, UNNEST(generate_series(0, {_PQ_M - 1})) AS t(s)
+               list_slice(embedding, s * {S.PQ_SUB} + 1, s * {S.PQ_SUB} + {S.PQ_SUB}) AS v8
+        FROM embeddings, UNNEST(generate_series(0, {S.PQ_M - 1})) AS t(s)
     ),
     cb AS (
         SELECT cid, CAST(t.s AS INTEGER) AS subspace,
-               list_slice(embedding, s * {_PQ_SUB} + 1, s * {_PQ_SUB} + {_PQ_SUB}) AS c8
-        FROM seeds, UNNEST(generate_series(0, {_PQ_M - 1})) AS t(s)
+               list_slice(embedding, s * {S.PQ_SUB} + 1, s * {S.PQ_SUB} + {S.PQ_SUB}) AS c8
+        FROM seeds, UNNEST(generate_series(0, {S.PQ_M - 1})) AS t(s)
     ),
     scored AS (
         SELECT sub.vec_id, sub.subspace, cb.cid,
@@ -623,8 +605,8 @@ def sim_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.similarity import pq_assign, pq_codebook
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cb = pq_codebook(emb, m=_PQ_M, k=_PQ_K)
-    return pq_assign(emb, cb, m=_PQ_M)
+    cb = pq_codebook(emb)
+    return pq_assign(emb, cb)
 
 
 def _pq_codes_ctes(p: str, sub: str) -> str:
@@ -658,17 +640,17 @@ def _pq_index_ctes(p: str = "") -> str:
     otherwise clash)."""
     return f"""
     {p}seeds AS (
-        SELECT vec_id AS cid, embedding FROM embeddings ORDER BY vec_id LIMIT {_PQ_K}
+        SELECT vec_id AS cid, embedding FROM embeddings ORDER BY vec_id LIMIT {S.PQ_K}
     ),
     {p}sub AS (
         SELECT vec_id, CAST(t.s AS INTEGER) AS subspace,
-               list_slice(embedding, s * {_PQ_SUB} + 1, s * {_PQ_SUB} + {_PQ_SUB}) AS v8
-        FROM embeddings, UNNEST(generate_series(0, {_PQ_M - 1})) AS t(s)
+               list_slice(embedding, s * {S.PQ_SUB} + 1, s * {S.PQ_SUB} + {S.PQ_SUB}) AS v8
+        FROM embeddings, UNNEST(generate_series(0, {S.PQ_M - 1})) AS t(s)
     ),
     {p}cb AS (
         SELECT cid, CAST(t.s AS INTEGER) AS subspace,
-               list_slice(embedding, s * {_PQ_SUB} + 1, s * {_PQ_SUB} + {_PQ_SUB}) AS c8
-        FROM {p}seeds, UNNEST(generate_series(0, {_PQ_M - 1})) AS t(s)
+               list_slice(embedding, s * {S.PQ_SUB} + 1, s * {S.PQ_SUB} + {S.PQ_SUB}) AS c8
+        FROM {p}seeds, UNNEST(generate_series(0, {S.PQ_M - 1})) AS t(s)
     ),""" + _pq_codes_ctes(p, f"{p}sub") + f""",
     {p}psub AS (
         SELECT vec_id AS query_id, subspace, v8 AS p8 FROM {p}sub WHERE vec_id < 10
@@ -724,7 +706,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.similarity import pq_adc_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return pq_adc_topk(emb, emb.filter(F.col("vec_id") < 10), m=_PQ_M, k_centroids=_PQ_K)
+    return pq_adc_topk(emb, emb.filter(F.col("vec_id") < 10))
 
 
 #: the composed IVF-PQ chain (IVF assign + probed cells + PQ index +
@@ -732,7 +714,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: sim_ivf_pq_recall, and (nprobe-parameterized) sim_nprobe_curve so the
 #: recall evaluations certify the same composed index the search serves
 #: from.
-def _ivf_pq_ctes(nprobe: int = _NPROBE) -> str:
+def _ivf_pq_ctes(nprobe: int = S.NPROBE) -> str:
     return (
         _CENT_CTE
         + ","
@@ -775,10 +757,7 @@ def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.similarity import ivf_pq_search
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_pq_search(
-        emb, emb.filter(F.col("vec_id") < 10),
-        nprobe=_NPROBE, k_cells=_K_CELLS, m=_PQ_M, k_centroids=_PQ_K,
-    )
+    return ivf_pq_search(emb, emb.filter(F.col("vec_id") < 10))
 
 
 # shared oracle CTEs: the exact cosine top 10 of each of the first 10 vectors
@@ -883,7 +862,7 @@ def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 10)
-    adc = pq_adc_topk(emb, probes, m=_PQ_M, k_centroids=_PQ_K).select(
+    adc = pq_adc_topk(emb, probes).select(
         "query_id", "neighbor_id"
     )
     return _recall10(emb, probes, adc)
@@ -906,7 +885,7 @@ def _pq_lloyd_iter_ctes(src_codes: str, p: str) -> str:
                ROUND(CAST(SUM(CAST(CAST(v8[CAST(t.p AS INTEGER)] AS DOUBLE)
                                    AS DECIMAL(25,12))) AS DOUBLE) / COUNT(*), 6)
                    AS mval
-        FROM {p}av, UNNEST(generate_series(1, {_PQ_SUB})) AS t(p)
+        FROM {p}av, UNNEST(generate_series(1, {S.PQ_SUB})) AS t(p)
         GROUP BY 1, 2, 3
     ),
     {p}cb AS (
@@ -916,34 +895,30 @@ def _pq_lloyd_iter_ctes(src_codes: str, p: str) -> str:
     ),""" + _pq_codes_ctes(p, "sub")
 
 
-def _pq_adc_from(cb: str, codes: str) -> str:
-    """The ADC search CTEs (probe LUT + full-scan distances) over a given
-    codebook/codes pair — appended after the Lloyd iteration chain."""
-    return f""",
-    rlut AS (
-        SELECT psub.query_id, {cb}.subspace, {cb}.cid AS code,
-               CAST(ROUND(list_sum(list_transform(list_zip(psub.p8, {cb}.c8),
-                        x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))
-                           * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))),
-                     4) AS DECIMAL(20,4)) AS pd2
-        FROM psub JOIN {cb} ON {cb}.subspace = psub.subspace
-    ),
-    radc AS (
-        SELECT l.query_id, c.vec_id, SUM(l.pd2) AS adc_dec
-        FROM {codes} c
-        JOIN rlut l ON l.subspace = c.subspace AND l.code = c.code
-        WHERE c.vec_id != l.query_id
-        GROUP BY 1, 2
-    )"""
-
-
 #: two Lloyd steps + ADC search on the twice-refined index — mirrors
-#: pq_refine_codebook(iterations=2); measured recall@10 0.74 -> ~0.8 at
+#: pq_refine_codebook's two rounds; measured recall@10 0.74 -> ~0.8 at
 #: sf0.1 over the single-iteration form.
 _PQ_LLOYD_CTES = (
     _pq_lloyd_iter_ctes("codes", "r")
     + _pq_lloyd_iter_ctes("rcodes", "r2")
-    + _pq_adc_from("r2cb", "r2codes")
+    # the ADC search CTEs (probe LUT + full-scan distances) over the
+    # twice-refined codebook
+    + """,
+    rlut AS (
+        SELECT psub.query_id, r2cb.subspace, r2cb.cid AS code,
+               CAST(ROUND(list_sum(list_transform(list_zip(psub.p8, r2cb.c8),
+                        x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))
+                           * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))),
+                     4) AS DECIMAL(20,4)) AS pd2
+        FROM psub JOIN r2cb ON r2cb.subspace = psub.subspace
+    ),
+    radc AS (
+        SELECT l.query_id, c.vec_id, SUM(l.pd2) AS adc_dec
+        FROM r2codes c
+        JOIN rlut l ON l.subspace = c.subspace AND l.code = c.code
+        WHERE c.vec_id != l.query_id
+        GROUP BY 1, 2
+    )"""
 )
 
 
@@ -971,10 +946,10 @@ def sim_pq_lloyd_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cb = pq_codebook(emb, m=_PQ_M, k=_PQ_K)
-    rcb = pq_refine_codebook(emb, cb, m=_PQ_M, iterations=2)
+    cb = pq_codebook(emb)
+    rcb = pq_refine_codebook(emb, cb)
     probes = emb.filter(F.col("vec_id") < 10)
-    adc = pq_adc_topk(emb, probes, m=_PQ_M, codebook=rcb).select(
+    adc = pq_adc_topk(emb, probes, codebook=rcb).select(
         "query_id", "neighbor_id"
     )
     return _recall10(emb, probes, adc)
@@ -998,9 +973,7 @@ def sim_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 10)
-    approx = ivf_pq_search(
-        emb, probes, nprobe=_NPROBE, k_cells=_K_CELLS, m=_PQ_M, k_centroids=_PQ_K
-    ).select("query_id", "neighbor_id")
+    approx = ivf_pq_search(emb, probes).select("query_id", "neighbor_id")
     return _recall10(emb, probes, approx)
 
 
@@ -1042,10 +1015,7 @@ def sim_recall_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 10)
-    approx = ivf_pq_search(
-        emb, probes, nprobe=_NPROBE, k_cells=_K_CELLS, m=_PQ_M,
-        k_centroids=_PQ_K,
-    ).select("query_id", "neighbor_id")
+    approx = ivf_pq_search(emb, probes).select("query_id", "neighbor_id")
     per_q = _recall10(emb, probes, approx)
     mean_recall = F.round(F.sum("n_hits") / (10.0 * F.count(F.lit(1))), 6)
     return per_q.agg(
@@ -1097,7 +1067,7 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     reranked per source node — the substrate for graph-based semantic
     dedup / diversity sampling."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return S.knn_graph(emb, n_planes=_N_PLANES, dim=_DIM)
+    return S.knn_graph(emb)
 
 
 #: the 16-d random projection of ``embedding`` as a DuckDB list: a dot
@@ -1123,7 +1093,7 @@ def sim_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle); registered output posexplodes the array so the driver's
     canonicalizer can hash it."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return S.random_projection(emb, dim=_DIM).select(
+    return S.random_projection(emb).select(
         "vec_id", F.posexplode("projected").alias("pos", "val")
     )
 
@@ -1261,7 +1231,7 @@ def sim_multiprobe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1+probes)x candidate volume — same capped single-shuffle shape."""
     emb = load_table(spark, sf_dir, "embeddings")
     return S.lsh_multiprobe_pairs(
-        S.lsh_signatures(emb, _N_PLANES, _DIM)
+        S.lsh_signatures(emb, S.N_PLANES)
     )
 
 
@@ -1299,7 +1269,7 @@ def sim_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     at scale use a zipWithIndex-style dense id pass first)."""
     emb = load_table(spark, sf_dir, "embeddings")
     total = emb.count()
-    sig = S.lsh_signatures(emb, _N_PLANES, _DIM)
+    sig = S.lsh_signatures(emb, S.N_PLANES)
     near = S.lsh_bucket_pairs(sig, directed=True).select(
         F.col("id_a").alias("anchor"), F.col("id_b").alias("neighbor")
     )
@@ -1408,7 +1378,7 @@ def sim_candidate_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(cos4 >= 0.4)
         .select("id_a", "id_b")
     )
-    sig = S.lsh_signatures(emb, _N_PLANES, _DIM)
+    sig = S.lsh_signatures(emb, S.N_PLANES)
     single = S.lsh_bucket_pairs(sig).select(
         F.col("id_a").alias("s_a"), F.col("id_b").alias("s_b")
     )
@@ -1476,7 +1446,7 @@ def sim_banded_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = emb.count()
     bits = min(12, max(4, math.ceil(math.log2(max(n, 1) / 64))))
     return S.lsh_banded_pairs(
-        S.lsh_signatures(emb, 4 * bits, _DIM), band_bits=bits
+        S.lsh_signatures(emb, 4 * bits), band_bits=bits
     )
 
 
@@ -1510,7 +1480,7 @@ def dd_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedups one cell with zero cross-cell traffic."""
     emb = load_table(spark, sf_dir, "embeddings")
     return S.semantic_dedup_cells(
-        emb, S.ivf_seed_centroids(emb, _K_CELLS)
+        emb, S.ivf_seed_centroids(emb)
     )
 
 
@@ -1545,7 +1515,7 @@ def sim_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.graph import triangle_count
 
     emb = load_table(spark, sf_dir, "embeddings")
-    edges = S.lsh_bucket_pairs(S.lsh_signatures(emb, _N_PLANES, _DIM))
+    edges = S.lsh_bucket_pairs(S.lsh_signatures(emb, S.N_PLANES))
     return triangle_count(edges.select("id_a", "id_b"))
 
 
@@ -1577,7 +1547,7 @@ def sim_ivf_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cell, dim, c) scalar rows; the groupBy ships k*d groups regardless
     of corpus size."""
     emb = load_table(spark, sf_dir, "embeddings")
-    assign = S.ivf_assign(emb, S.ivf_seed_centroids(emb, _K_CELLS)).select(
+    assign = S.ivf_assign(emb, S.ivf_seed_centroids(emb)).select(
         "vec_id", "centroid_id"
     )
     av = emb.join(assign, "vec_id")
@@ -1703,7 +1673,7 @@ def sim_kcore_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     kg = sim_knn_graph(spark, sf_dir)
     edges = kg.select(F.col("vec_id").alias("id_a"), F.col("neighbor_id").alias("id_b"))
-    return k_core(edges, 6).agg(
+    return k_core(edges).agg(
         F.count("*").alias("n_nodes"),
         F.sum("degree").alias("sum_degree"),
         F.min("node").alias("min_node"),
@@ -1796,7 +1766,7 @@ def sim_jaccard_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-bounded groupBy. Reuses the sim_knn_graph construction, so the
     oracle certifies graph + scoring end-to-end."""
     emb = load_table(spark, sf_dir, "embeddings")
-    knn = S.knn_graph(emb, n_planes=_N_PLANES, dim=_DIM)
+    knn = S.knn_graph(emb)
     e = knn.select(F.col("vec_id").alias("u"), F.col("neighbor_id").alias("n"))
     deg = e.groupBy("u").agg(F.count("*").alias("d"))
     und = e.select(
@@ -1870,13 +1840,7 @@ def sim_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = S.brute_force_topk(emb, probes).select(
         "query_id", "neighbor_id"
     )
-    approx = ivf_pq_nprobe_curve(
-        emb,
-        probes,
-        k_cells=_K_CELLS,
-        m=_PQ_M,
-        k_centroids=_PQ_K,
-    ).select("nprobe", "query_id", "neighbor_id")
+    approx = ivf_pq_nprobe_curve(emb, probes).select("nprobe", "query_id", "neighbor_id")
     hits = approx.join(exact, ["query_id", "neighbor_id"]).groupBy(
         "nprobe"
     ).agg(F.count("*").cast("long").alias("n_hits"))
@@ -1938,7 +1902,7 @@ def sim_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
-    knn = S.knn_graph(emb, n_planes=_N_PLANES, dim=_DIM)
+    knn = S.knn_graph(emb)
     labels = emb.select("vec_id", "label")
     nb = knn.select("vec_id", "neighbor_id").join(
         labels.select(
@@ -2107,16 +2071,16 @@ _IVF_PQ_RES_CTES = (
         JOIN embeddings e ON e.vec_id = a.vec_id
         JOIN cvecs cv ON cv.centroid_id = a.centroid_id
     ),
-    rseeds AS (SELECT vec_id AS cid, rvec FROM rv ORDER BY vec_id LIMIT {_PQ_K}),
+    rseeds AS (SELECT vec_id AS cid, rvec FROM rv ORDER BY vec_id LIMIT {S.PQ_K}),
     rsub AS (
         SELECT vec_id, CAST(t.s AS INTEGER) AS subspace,
-               list_slice(rvec, s * {_PQ_SUB} + 1, s * {_PQ_SUB} + {_PQ_SUB}) AS v8
-        FROM rv, UNNEST(generate_series(0, {_PQ_M - 1})) AS t(s)
+               list_slice(rvec, s * {S.PQ_SUB} + 1, s * {S.PQ_SUB} + {S.PQ_SUB}) AS v8
+        FROM rv, UNNEST(generate_series(0, {S.PQ_M - 1})) AS t(s)
     ),
     rcb AS (
         SELECT cid, CAST(t.s AS INTEGER) AS subspace,
-               list_slice(rvec, s * {_PQ_SUB} + 1, s * {_PQ_SUB} + {_PQ_SUB}) AS c8
-        FROM rseeds, UNNEST(generate_series(0, {_PQ_M - 1})) AS t(s)
+               list_slice(rvec, s * {S.PQ_SUB} + 1, s * {S.PQ_SUB} + {S.PQ_SUB}) AS c8
+        FROM rseeds, UNNEST(generate_series(0, {S.PQ_M - 1})) AS t(s)
     ),
     rscored AS (
         SELECT rsub.vec_id, rsub.subspace, rcb.cid,
@@ -2143,8 +2107,8 @@ _IVF_PQ_RES_CTES = (
     ),
     qsub AS (
         SELECT query_id, centroid_id, CAST(t.s AS INTEGER) AS subspace,
-               list_slice(qrvec, s * {_PQ_SUB} + 1, s * {_PQ_SUB} + {_PQ_SUB}) AS p8
-        FROM qres, UNNEST(generate_series(0, {_PQ_M - 1})) AS t(s)
+               list_slice(qrvec, s * {S.PQ_SUB} + 1, s * {S.PQ_SUB} + {S.PQ_SUB}) AS p8
+        FROM qres, UNNEST(generate_series(0, {S.PQ_M - 1})) AS t(s)
     ),
     rlut AS (
         SELECT q.query_id, q.centroid_id, q.subspace, rcb.cid AS code,
@@ -2186,10 +2150,7 @@ def sim_ivf_pq_res_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.similarity import ivf_pq_residual_search
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_pq_residual_search(
-        emb, emb.filter(F.col("vec_id") < 10),
-        nprobe=_NPROBE, k_cells=_K_CELLS, m=_PQ_M, k_centroids=_PQ_K,
-    )
+    return ivf_pq_residual_search(emb, emb.filter(F.col("vec_id") < 10))
 
 
 @query(
@@ -2218,10 +2179,7 @@ def sim_ivf_pq_res_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 10)
-    approx = ivf_pq_residual_search(
-        emb, probes, nprobe=_NPROBE, k_cells=_K_CELLS, m=_PQ_M,
-        k_centroids=_PQ_K,
-    ).select("query_id", "neighbor_id")
+    approx = ivf_pq_residual_search(emb, probes).select("query_id", "neighbor_id")
     return _recall10(emb, probes, approx)
 
 
@@ -2528,7 +2486,7 @@ def sim_cell_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cap the sample IS the cell, so small-scale results are the
     exact medoid."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cell = S.ivf_assign(emb, S.ivf_seed_centroids(emb, _K_CELLS)).select(
+    cell = S.ivf_assign(emb, S.ivf_seed_centroids(emb)).select(
         "vec_id", "centroid_id"
     )
     mem = emb.select("vec_id", "embedding").join(cell, "vec_id")
@@ -2551,7 +2509,7 @@ def sim_cell_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
     # holds; raises on a corrupt row).
     samp = mem.withColumn(
         "embedding",
-        S._checked_dim(F.col("embedding"), _DIM, "sim_cell_medoids"),
+        S._checked_dim(F.col("embedding"), "sim_cell_medoids"),
     ).withColumn("srk", srk).filter(F.col("srk") <= 128)
     x = samp.select(
         F.col("centroid_id"),
@@ -2568,7 +2526,7 @@ def sim_cell_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
     # action — see operators/similarity._fold_sum for the measured
     # planning-vs-execution break-even)
     d2_expr = F.lit(0.0)
-    for _k in range(_DIM):
+    for _k in range(S.DIM):
         _d = F.get(F.col("va"), F.lit(_k)).cast("double") - F.get(
             F.col("vb"), F.lit(_k)
         ).cast("double")
@@ -2636,7 +2594,7 @@ def sim_ivf_delta_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     old = emb.filter(F.col("vec_id") < 400)
     delta = emb.filter(F.col("vec_id") >= 400)
-    cents = S.ivf_seed_centroids(old, _K_CELLS)
+    cents = S.ivf_seed_centroids(old)
     return S.ivf_assign(delta, cents)
 
 
@@ -2688,7 +2646,7 @@ def sim_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (order-independent); majority argmax ties break to the lowest
     label."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cell = S.ivf_assign(emb, S.ivf_seed_centroids(emb, _K_CELLS)).select(
+    cell = S.ivf_assign(emb, S.ivf_seed_centroids(emb)).select(
         "vec_id", "centroid_id"
     )
     lab = emb.select("vec_id", "label").join(cell, "vec_id")

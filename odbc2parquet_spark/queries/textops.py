@@ -318,7 +318,7 @@ def tx_pack_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(F.filter(F.split(F.col("text"), " "), lambda w: w != "")).cast("long").alias("n_tokens"),
     )
-    return pack_shards_two_pass(with_tokens, budget=500)
+    return pack_shards_two_pass(with_tokens)
 
 
 @query(
@@ -349,9 +349,6 @@ def tx_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     return X.bigram_surprisal(load_table(spark, sf_dir, "documents"))
 
 
-_SAMPLE_FRACS = {"en": 0.5, "de": 1.0, "es": 0.25}
-
-
 @query(
     "tx_stratified_sample",
     bench=False,
@@ -373,9 +370,7 @@ def tx_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.sampling import stratified_sample
 
     docs = load_table(spark, sf_dir, "documents")
-    return stratified_sample(docs, "lang", "doc_id", _SAMPLE_FRACS).select(
-        "doc_id", "lang"
-    )
+    return stratified_sample(docs).select("doc_id", "lang")
 
 
 def _rate_sample_sql(col: str) -> str:
@@ -423,7 +418,7 @@ def tx_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("source").isin("src0", "src1", "src2")
     )
-    out = mixture_sample(docs, "source", "doc_id", {"src0": 0.5, "src1": 0.25, "src2": 0.25})
+    out = mixture_sample(docs)
     return out.select("doc_id", "source")
 
 
@@ -497,7 +492,7 @@ def tx_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     over-threshold output is tiny -> the broadcast blocklist for the
     cleaning pass."""
     docs = load_table(spark, sf_dir, "documents")
-    return X.boilerplate_ngrams(docs, n=2, min_docs=35)
+    return X.boilerplate_ngrams(docs)
 
 
 @query(
@@ -521,7 +516,7 @@ def tx_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc fold."""
     docs = load_table(spark, sf_dir, "documents")
     probes = docs.filter(F.col("doc_id") < 10)
-    return X.contamination(docs, probes, n=2)
+    return X.contamination(docs, probes)
 
 
 @query(
@@ -698,7 +693,7 @@ def tx_cms_word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = docs.select(F.explode(F.split(F.col("text"), " ")).alias("w")).filter(
         F.col("w") != ""
     )
-    sk = count_min_sketch(words, "w")
+    sk = count_min_sketch(words)
     probes = heavy_hitters(words, "w", top_n=20)
     est = cms_estimate(sk, probes.select("value"))
     return est.join(probes, "value").select(
@@ -1603,7 +1598,7 @@ def tx_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain frequency capping audit (operators/text.cap_per_source):
     keep the 40 highest-quality documents per source; report per source
     how many survive and the quality cutoff the cap implies."""
-    ranked = X.cap_per_source(load_table(spark, sf_dir, "documents"), cap=40)
+    ranked = X.cap_per_source(load_table(spark, sf_dir, "documents"))
     return ranked.groupBy("source").agg(
         F.count("*").cast("long").alias("n_docs"),
         F.sum(F.col("kept").cast("int")).cast("long").alias("n_kept"),
@@ -2000,7 +1995,7 @@ def tx_pps_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.sampling import pps_sample
 
     docs = load_table(spark, sf_dir, "documents")
-    return pps_sample(docs, "n_chars", k=500)
+    return pps_sample(docs)
 
 
 @query(
@@ -2324,10 +2319,7 @@ def tx_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.sampling import reservoir_sample
 
     docs = load_table(spark, sf_dir, "documents")
-    out = reservoir_sample(
-        docs.select("lang", "doc_id", "n_chars"),
-        ["lang"], "doc_id", "n_chars", k=16,
-    )
+    out = reservoir_sample(docs.select("lang", "doc_id", "n_chars"))
     return out.select("lang", "doc_id", "n_chars", F.col("rn").cast("long").alias("rn"), "score6")
 
 
@@ -2382,7 +2374,7 @@ def tx_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.sampling import kfold_assign
 
     docs = load_table(spark, sf_dir, "documents")
-    return kfold_assign(docs, "doc_id", strata_col="lang")
+    return kfold_assign(docs)
 
 
 @query(
@@ -2408,7 +2400,7 @@ def tx_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odbc2parquet_spark.operators.sampling import temperature_sample
 
     docs = load_table(spark, sf_dir, "documents")
-    return temperature_sample(docs, "lang", "doc_id").select("doc_id", "lang")
+    return temperature_sample(docs).select("doc_id", "lang")
 
 
 @query(
@@ -2421,7 +2413,7 @@ def tx_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST('0x' || substring(md5(g), 1, 15) AS BIGINT) AS gh
         FROM d
     ),"""
-    + _prefix_jaccard_sql(3, 5),
+    + _prefix_jaccard_sql(3),
 )
 def mm_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-modal near-duplicate VIDEO detection: real MP4 sample
@@ -2467,7 +2459,7 @@ def mm_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                  AS BIGINT) AS gh
         FROM w
     ),"""
-    + _prefix_jaccard_sql(4, 5),
+    + _prefix_jaccard_sql(4),
 )
 def mm_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio near-duplicate detection, the WAV sibling of
@@ -2576,9 +2568,6 @@ def tx_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _lm_terciles(lm, Window.orderBy(F.desc("avg_logprob"), F.asc("doc_id")), "doc_id")
 
 
-#: function-word probe set for THIS corpus (see tx_gopher_rules docstring)
-_CORPUS_STOPWORDS = ("the", "a")
-
 _GOPHER_CTE = """
     gw AS (
         SELECT doc_id, text,
@@ -2641,12 +2630,9 @@ def tx_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     0/1 rule flags + combined keep verdict, every threshold evaluated in
     cross-multiplied exact-integer form. Zero shuffles — a codegen'd
     scan, the first gate of a 100 TB curation funnel. The stopword probe
-    set is instantiated with THIS corpus's function-word inventory
-    ('the', 'a' — the synthetic vocabulary has no other English function
-    words); the operator defaults to the canonical 8-word Gopher set."""
-    return X.gopher_rules(
-        load_table(spark, sf_dir, "documents"), stopwords=_CORPUS_STOPWORDS
-    )
+    set is THIS corpus's function-word inventory ('the', 'a' — the
+    synthetic vocabulary has no other English function words)."""
+    return X.gopher_rules(load_table(spark, sf_dir, "documents"))
 
 
 @query(
@@ -2674,9 +2660,7 @@ def tx_curation_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket attached. Composes tx_gopher_rules and tx_ccnet_buckets;
     the join is doc-keyed (no new shuffle shape)."""
     docs = load_table(spark, sf_dir, "documents")
-    rules = X.gopher_rules(docs, stopwords=_CORPUS_STOPWORDS).select(
-        "doc_id", "keep_doc"
-    )
+    rules = X.gopher_rules(docs).select("doc_id", "keep_doc")
     lm = X.bigram_lm_scores(docs)
     w = Window.orderBy(F.desc("avg_logprob"), F.asc("doc_id"))
     nt = F.ntile(3).over(w)
@@ -3884,7 +3868,7 @@ def tx_ht_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).alias("_drop"),
     ).select("tw")
     exact = y.agg(F.sum("y").alias("exact_words"))
-    sample = pps_sample(docs, "n_chars", k=500)
+    sample = pps_sample(docs)
     est = (
         sample.join(y, "doc_id")
         .crossJoin(F.broadcast(tot))
@@ -4548,7 +4532,7 @@ def tx_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     surv = cachereg.track(
         buckets.join(keep, "doc_id").join(toks, "doc_id").persist()
     )
-    shards = pack_shards_two_pass(surv.select("doc_id", "n_tokens"), budget=500)
+    shards = pack_shards_two_pass(surv.select("doc_id", "n_tokens"))
     return (
         shards.join(surv.select("doc_id", "bucket"), "doc_id")
         .crossJoin(F.broadcast(gate))
@@ -4902,7 +4886,7 @@ def tx_curation_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(toks, "doc_id")
         .persist()
     )
-    shards = pack_shards_two_pass(surv.select("doc_id", "n_tokens"), budget=500)
+    shards = pack_shards_two_pass(surv.select("doc_id", "n_tokens"))
     return (
         shards.join(surv.select("doc_id", "avg_logprob"), "doc_id")
         .crossJoin(F.broadcast(dstats))

@@ -127,6 +127,36 @@ def _check_mode(opts: SinkOptions, mode: str) -> None:
         raise ValueError(f"{', '.join(rejected)} not supported in {mode} mode: {why}")
 
 
+def _file_mode(opts: SinkOptions) -> bool:
+    """Whether ``opts`` asks for .par files (one, or split) over a directory."""
+    return bool(opts.single_file or opts.row_groups_per_file or opts.file_size_threshold)
+
+
+def check_options(opts: SinkOptions, path: str) -> None:
+    """Raise on each rule that depends only on ``opts`` and the output
+    ``path`` (``-`` is stdout), so a caller can check them before any
+    data is read: the options the output mode rejects, unknown column
+    encoding names, a compression level for a codec the mode's writer
+    carries no level for, and a file-mode path that is a directory."""
+    if path == "-":
+        _check_mode(opts, "stdout")
+    elif _file_mode(opts):
+        _check_mode(opts, "file")
+        if os.path.isdir(path):
+            # shutil.move would silently drop the part INSIDE the directory;
+            # the reference treats a directory output path as an error
+            # (tests/integration.rs:181).
+            raise ValueError(f"output path {path!r} is an existing directory")
+    if opts.column_encodings:
+        _check_mode(opts, "column_encodings")
+        unknown = {c: e for c, e in opts.column_encodings.items() if e not in COLUMN_ENCODINGS}
+        if unknown:
+            raise ValueError(
+                f"unknown column encodings {unknown}; valid: {sorted(COLUMN_ENCODINGS)}"
+            )
+    _compression_level(opts, "arrow" if path == "-" or opts.column_encodings else "spark")
+
+
 def _compression_level(opts: SinkOptions, writer: str) -> int | None:
     """``opts.compression_level``, if ``writer`` ("spark" or "arrow")
     carries a level for the codec; raises otherwise."""
@@ -141,17 +171,12 @@ def _compression_level(opts: SinkOptions, writer: str) -> int | None:
 
 
 def _arrow_writer(opts: SinkOptions, columns: list[str]):
-    """Validate ``opts`` for pyarrow and return ``open(sink, schema)``,
-    which opens a ParquetWriter with the codec, level and per-column
-    encodings of ``opts``. Validation runs where this is called (the
-    driver); the opener captures only plain values, so it pickles to
-    executors."""
+    """Return ``open(sink, schema)``, which opens a ParquetWriter with the
+    codec, level and per-column encodings of ``opts`` (checked by
+    :func:`check_options`). The columns are checked where this is called
+    (the driver); the opener captures only plain values, so it pickles
+    to executors."""
     col_encodings = opts.column_encodings or {}
-    unknown = {c: e for c, e in col_encodings.items() if e not in COLUMN_ENCODINGS}
-    if unknown:
-        raise ValueError(
-            f"unknown column encodings {unknown}; valid: {sorted(COLUMN_ENCODINGS)}"
-        )
     missing = set(col_encodings) - set(columns)
     if missing:
         raise ValueError(f"column_encodings for absent columns: {sorted(missing)}")
@@ -282,7 +307,7 @@ def write_parquet_stdout(
     from pyspark.sql.pandas.types import to_arrow_schema
 
     opts = opts or SinkOptions()
-    _check_mode(opts, "stdout")
+    check_options(opts, "-")
     open_writer = _arrow_writer(opts, df.columns)
     if opts.no_empty_file and df.isEmpty():
         return 0
@@ -387,16 +412,8 @@ def write_parquet(
     field metadata into the parquet footer).
     """
     opts = opts or SinkOptions()
-    file_mode = opts.single_file or opts.row_groups_per_file or opts.file_size_threshold
-    if file_mode:
-        _check_mode(opts, "file")
-        if os.path.isdir(path):
-            # shutil.move would silently drop the part INSIDE the directory;
-            # the reference treats a directory output path as an error
-            # (tests/integration.rs:181).
-            raise ValueError(f"output path {path!r} is an existing directory")
-    if opts.column_encodings:
-        _check_mode(opts, "column_encodings")
+    check_options(opts, path)
+    file_mode = _file_mode(opts)
 
     if opts.no_empty_file and df.isEmpty():
         return []

@@ -54,9 +54,9 @@ def sessionized_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def stream_stream_interval_join(left: DataFrame, right: DataFrame, key: str) -> DataFrame:
+def stream_stream_interval_join(left: DataFrame, right: DataFrame) -> DataFrame:
     """Watermarked stream-stream join: right events within 10 minutes AFTER
-    the left event, same ``key``, both sides timed by ``ts``.
+    the left event, same ``user_id``, both sides timed by ``ts``.
 
     Both sides carry 30-minute watermarks so the state store can discard
     rows older than (watermark + 10 minutes) — the condition that keeps a stream-stream
@@ -64,14 +64,14 @@ def stream_stream_interval_join(left: DataFrame, right: DataFrame, key: str) -> 
     prefixed l_/r_.
     """
     l = left.withWatermark("ts", "30 minutes").select(
-        F.col(key).alias("l_key"),
+        F.col("user_id").alias("l_key"),
         F.col("ts").alias("l_ts"),
-        *[F.col(c).alias(f"l_{c}") for c in left.columns if c not in (key, "ts")],
+        *[F.col(c).alias(f"l_{c}") for c in left.columns if c not in ("user_id", "ts")],
     )
     r = right.withWatermark("ts", "30 minutes").select(
-        F.col(key).alias("r_key"),
+        F.col("user_id").alias("r_key"),
         F.col("ts").alias("r_ts"),
-        *[F.col(c).alias(f"r_{c}") for c in right.columns if c not in (key, "ts")],
+        *[F.col(c).alias(f"r_{c}") for c in right.columns if c not in ("user_id", "ts")],
     )
     cond = (
         (F.col("l_key") == F.col("r_key"))
@@ -100,14 +100,11 @@ def streaming_exact_dedup(docs: DataFrame) -> DataFrame:
     return hashed.dropDuplicates(["content_hash"])
 
 
-def late_event_audit(
-    events: DataFrame,
-    order_col: str = "event_id",
-) -> DataFrame:
+def late_event_audit(events: DataFrame) -> DataFrame:
     """What-if audit of a streaming watermark policy over a recorded log:
     which events WOULD the engine have dropped as too late?
 
-    Arrival order is the ingestion sequence (``order_col``); the watermark
+    Arrival order is the ingestion sequence (``arrival``); the watermark
     before each event is (max event-time seen so far) - 10 minutes. An event is
     late iff its event time is below that. Emits per-event-type totals
     (n_events, n_late) — the tuning signal for a watermark delay before
@@ -126,9 +123,9 @@ def late_event_audit(
     spark = events.sparkSession
     sec = F.unix_micros(F.col("ts").cast("timestamp"))
     base = events.select(
-        F.col(order_col).alias("_oid_"), sec.alias("_us_"), "event_type"
+        F.col("arrival").alias("_oid_"), sec.alias("_us_"), "event_type"
     )
-    with_pid = base.withColumn("_pid_", order_bucket_col(base, "_oid_", 32))
+    with_pid = base.withColumn("_pid_", order_bucket_col(base, "_oid_"))
     pmax = {
         r._pid_: r.m
         for r in with_pid.groupBy("_pid_").agg(F.max("_us_").alias("m")).collect()

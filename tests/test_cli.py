@@ -74,23 +74,6 @@ def test_cli_tables_dir_registers_every_parquet_file(spark, tmp_path, capsys):
     assert pq.read_table(out).to_pylist() == [{"total": 42, "n": 3}]
 
 
-def test_cli_column_encodings_with_partition_by_is_rejected(spark, sf_dir, tmp_path):
-    """The per-column encodings sink writes flat files, so asking for hive
-    partitioning as well is an error before anything is written, not a
-    directory without its partitions."""
-    import pytest
-
-    out = str(tmp_path / "nation")
-    with pytest.raises(ValueError, match="partition_by not supported in column_encodings mode"):
-        main(
-            ["query", "--tables-dir", sf_dir,
-             "--parquet-column-encoding", "n_nationkey:plain",
-             "--partition-by", "n_regionkey",
-             out, "SELECT n_nationkey, n_regionkey FROM nation"]
-        )
-    assert not os.path.exists(out)
-
-
 def test_every_query_option_is_set_by_the_cli_and_read():
     """No dead option: each field of SinkOptions and MappingOptions is a
     keyword where __main__.py builds that object, and some module of the
@@ -338,23 +321,64 @@ def test_cli_jdbc_url_rejects_params():
                      "Either --dsn, --jdbc-url or --tables-dir", id="query"),
         pytest.param(["insert", "in.par", "t"],
                      "insert needs --dsn, --jdbc-url or --dbapi", id="insert"),
-        pytest.param(["exec", "--jdbc-url", "jdbc:derby:memory:x", "in.par", "DELETE FROM t"],
-                     "exec needs --dbapi", id="exec"),
+        pytest.param(["exec", "in.par", "DELETE FROM t"], "exec needs --dbapi", id="exec"),
         pytest.param(["query", "--tables-dir", ".", "--parquet-column-encoding", "plain",
                       "out.par", "SELECT 1"], "expects COLUMN:ENCODING", id="encoding"),
+        # connection flags a subcommand would silently ignore
+        pytest.param(["query", "--tables-dir", ".", "--jdbc-url", "jdbc:derby:memory:x",
+                      "out.par", "SELECT 1"], "--tables-dir may not be combined",
+                     id="tables-dir-and-jdbc-url"),
+        pytest.param(["query", "--tables-dir", ".", "--dsn", "x", "out.par", "SELECT 1"],
+                     "--tables-dir may not be combined", id="tables-dir-and-dsn"),
+        pytest.param(["insert", "--dbapi", "sqlite3", "--jdbc-url", "jdbc:derby:memory:x",
+                      "in.par", "t"], "--dbapi may not be combined", id="dbapi-and-jdbc-url"),
+        pytest.param(["insert", "--dbapi", "sqlite3", "--dsn", "x", "in.par", "t"],
+                     "--dbapi may not be combined", id="dbapi-and-dsn"),
+        pytest.param(["insert", "--tables-dir", ".", "--dbapi", "sqlite3", "in.par", "t"],
+                     "unrecognized arguments: --tables-dir", id="insert-tables-dir"),
+        pytest.param(["exec", "--tables-dir", ".", "--dbapi", "sqlite3", "in.par", "X"],
+                     "unrecognized arguments: --tables-dir", id="exec-tables-dir"),
+        *[
+            pytest.param(["exec", flag, "v", "--dbapi", "sqlite3", "in.par", "X"],
+                         f"unrecognized arguments: {flag}", id=f"exec{flag}")
+            for flag in ("--jdbc-url", "--dsn", "--user", "--password")
+        ],
+        # sink rules that depend only on the flags and the output path
+        pytest.param(["query", "--tables-dir", ".", "--single-file", "--partition-by", "a",
+                      "out", "SELECT 1"], "partition_by not supported in file mode",
+                     id="single-file-and-partition-by"),
+        pytest.param(["query", "--tables-dir", ".", "--parquet-column-encoding", "a:plain",
+                      "--partition-by", "b", "out", "SELECT 1"],
+                     "partition_by not supported in column_encodings mode",
+                     id="column-encodings-and-partition-by"),
+        pytest.param(["query", "--tables-dir", ".", "--parquet-column-encoding", "a:zigzag",
+                      "out", "SELECT 1"], "unknown column encodings", id="unknown-encoding"),
+        pytest.param(["query", "--tables-dir", ".", "--column-compression-default", "snappy",
+                      "--column-compression-level-default", "3", "out", "SELECT 1"],
+                     "compression_level is not supported for codec 'snappy'",
+                     id="level-without-codec-support"),
+        pytest.param(["query", "--tables-dir", ".", "out.par", "SELECT 1"],
+                     "is an existing directory", id="file-mode-path-is-directory"),
     ],
 )
-def test_cli_usage_errors_exit_before_spark(monkeypatch, argv, message):
+def test_cli_usage_errors_exit_before_spark(monkeypatch, capsys, tmp_path, argv, message):
     """A usage error exits before the session starts, so the user does
-    not wait seconds of JVM start-up to read it."""
+    not wait seconds of JVM start-up to read it. The message is the
+    SystemExit's, or argparse's on stderr for a flag the subcommand
+    does not take."""
+    import re
+
     from odbc2parquet_spark import session
 
     def no_session(*a, **k):
         raise AssertionError("a Spark session was started")
 
     monkeypatch.setattr(session, "get_spark", no_session)
-    with pytest.raises(SystemExit, match=message):
+    monkeypatch.chdir(tmp_path)
+    (tmp_path / "out.par").mkdir()
+    with pytest.raises(SystemExit) as exc:
         main(argv)
+    assert re.search(message, f"{exc.value} {capsys.readouterr().err}"), exc.value
 
 
 def test_cli_dsn_unknown_is_actionable(tmp_path, monkeypatch):

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 def test_gopher_rules_flags(spark):
     from odbc2parquet_spark.operators.text import gopher_rules
 
-    good = " ".join(["the quick brown fox with that have of be to and"] * 6)
+    good = " ".join(["the quick brown fox with that have of be to a"] * 6)
     docs = spark.createDataFrame(
         [
             (1, good),  # 60 words, all rules pass
@@ -246,17 +246,37 @@ def test_ccnet_lang_buckets_partitioned(spark, sf_dir):
 def test_nprobe_curve_equals_independent_searches(spark, sf_dir):
     """The shared-index curve (one build, rank-filtered operating
     points) must return exactly the per-nprobe results of independent
-    ivf_pq_search runs — the candidates(p) == candidates(max p) filtered
-    to probe rank <= p identity."""
+    IVF-PQ searches — the candidates(p) == candidates(max p) filtered to
+    probe rank <= p identity. Each reference search is composed here from
+    the index pieces with its own probe cut; the one at the production
+    cut is ivf_pq_search itself."""
     from odbc2parquet_spark.catalog import load_table
-    from odbc2parquet_spark.operators.similarity import (
-        ivf_pq_nprobe_curve,
-        ivf_pq_search,
-    )
+    from odbc2parquet_spark.operators import similarity as S
 
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 5)
-    curve = ivf_pq_nprobe_curve(emb, probes, k_cells=8, k_centroids=8).collect()
+    curve = S.ivf_pq_nprobe_curve(emb, probes).collect()
+    cents = S.ivf_seed_centroids(emb)
+    cell = S.ivf_assign(emb, cents).select("vec_id", "centroid_id")
+    cb = S.pq_codebook(emb)
+    codes = S.pq_assign(emb, cb).select("vec_id", "subspace", "code")
+    lut = S._pq_probe_lut(probes, cb, "vec_id", "embedding")
+
+    def search(p):
+        qprobe = S.ivf_probe_cells(probes, cents, p).select("query_id", "centroid_id")
+        cand = (
+            cell.join(qprobe, "centroid_id")
+            .filter(F.col("vec_id") != F.col("query_id"))
+            .select("query_id", "vec_id")
+        )
+        scored = (
+            codes.join(cand, "vec_id")
+            .join(lut, ["query_id", "subspace", "code"])
+            .groupBy("query_id", "vec_id")
+            .agg(F.sum("pd2").alias("adc_dec"))
+        )
+        return S._adc_rank(scored)
+
     got = {
         p: sorted(
             (r.query_id, r.neighbor_id, r.adc4, r.rank)
@@ -267,13 +287,10 @@ def test_nprobe_curve_equals_independent_searches(spark, sf_dir):
     }
     assert {r.nprobe for r in curve} == set(got)
     for p in got:
-        ref = sorted(
-            (r.query_id, r.neighbor_id, r.adc4, r.rank)
-            for r in ivf_pq_search(
-                emb, probes, nprobe=p, k_cells=8, k_centroids=8,
-            ).collect()
-        )
+        ref = sorted((r.query_id, r.neighbor_id, r.adc4, r.rank) for r in search(p).collect())
         assert got[p] == ref, p
+    production = S.ivf_pq_search(emb, probes).collect()
+    assert got[S.NPROBE] == sorted((r.query_id, r.neighbor_id, r.adc4, r.rank) for r in production)
 
 
 def test_bmp_byte_histogram_consistent_with_pixel_sums(spark, sf_dir):

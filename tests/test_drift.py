@@ -39,8 +39,8 @@ def test_prefix_sums_empty_input(spark):
 def test_ks_identical_samples_is_zero(spark):
     # same distribution in both populations -> every CDF gap is 0
     rows = [(float(v), b) for v in range(50) for b in (True, False)]
-    df = spark.createDataFrame(rows, ["v", "b"])
-    r = ks_two_sample(df, "v", F.col("b")).collect()[0]
+    df = spark.createDataFrame(rows, ["value", "b"])
+    r = ks_two_sample(df, F.col("b")).collect()[0]
     assert (r.n_a, r.n_b, r.d_stat) == (50, 50, 0.0)
 
 
@@ -48,24 +48,24 @@ def test_ks_disjoint_samples_is_one(spark):
     rows = [(float(v), False) for v in range(30)] + [
         (float(v + 100), True) for v in range(30)
     ]
-    df = spark.createDataFrame(rows, ["v", "b"])
-    assert ks_two_sample(df, "v", F.col("b")).collect()[0].d_stat == 1.0
+    df = spark.createDataFrame(rows, ["value", "b"])
+    assert ks_two_sample(df, F.col("b")).collect()[0].d_stat == 1.0
 
 
 def test_auc_perfect_separation(spark):
     rows = [(float(s), True) for s in range(10, 20)] + [
         (float(s), False) for s in range(10)
     ]
-    df = spark.createDataFrame(rows, ["s", "p"])
-    r = rank_auc(df, "s", F.col("p")).collect()[0]
+    df = spark.createDataFrame(rows, ["value", "p"])
+    r = rank_auc(df, F.col("p")).collect()[0]
     assert (r.n_pos, r.n_neg, r.auc) == (10, 10, 1.0)
 
 
 def test_auc_ties_average_to_half(spark):
     # all scores equal -> AUC must be exactly 0.5 via average-rank ties
     rows = [(1.0, i % 2 == 0) for i in range(40)]
-    df = spark.createDataFrame(rows, ["s", "p"])
-    assert rank_auc(df, "s", F.col("p")).collect()[0].auc == 0.5
+    df = spark.createDataFrame(rows, ["value", "p"])
+    assert rank_auc(df, F.col("p")).collect()[0].auc == 0.5
 
 
 def test_gini_equal_values_is_zero(spark):
@@ -74,7 +74,7 @@ def test_gini_equal_values_is_zero(spark):
     df = spark.createDataFrame(
         [(Decimal("5.000000"),)] * 20, "v decimal(18,6)"
     )
-    r = gini_concentration(df, "v").collect()[0]
+    r = gini_concentration(df).collect()[0]
     assert r.n == 20 and r.gini == 0.0
 
 
@@ -84,7 +84,7 @@ def test_gini_single_owner(spark):
 
     vals = [(Decimal("0.000000"),)] * 9 + [(Decimal("10.000000"),)]
     df = spark.createDataFrame(vals, "v decimal(18,6)")
-    assert gini_concentration(df, "v").collect()[0].gini == pytest.approx(
+    assert gini_concentration(df).collect()[0].gini == pytest.approx(
         0.9, abs=1e-9
     )
 
@@ -95,16 +95,16 @@ def test_chi_square_independent_is_zero(spark):
     for a in ("x", "y"):
         for b, c in (("u", 10), ("w", 30)):
             rows += [(a, b)] * c
-    df = spark.createDataFrame(rows, ["a", "b"])
-    r = chi_square_independence(df, "a", "b").collect()[0]
+    df = spark.createDataFrame(rows, ["o_orderpriority", "o_orderstatus"])
+    r = chi_square_independence(df).collect()[0]
     assert (r.n, r.dof, r.chi2) == (80, 1, 0.0)
 
 
 def test_chi_square_missing_cell_counts_expectation(spark):
     # a zero-observed cell must still contribute (0-e)^2/e = e
     rows = [("x", "u")] * 10 + [("x", "w")] * 10 + [("y", "u")] * 10
-    df = spark.createDataFrame(rows, ["a", "b"])
-    r = chi_square_independence(df, "a", "b").collect()[0]
+    df = spark.createDataFrame(rows, ["o_orderpriority", "o_orderstatus"])
+    r = chi_square_independence(df).collect()[0]
     # classic 2x2 chi2 = n(ad-bc)^2 / (row1 row2 col1 col2)
     expected = 30 * (10 * 0 - 10 * 10) ** 2 / (20 * 10 * 20 * 10)
     assert r.chi2 == pytest.approx(expected, abs=1e-6)
@@ -113,8 +113,8 @@ def test_chi_square_missing_cell_counts_expectation(spark):
 
 def test_psi_identical_populations_near_zero(spark):
     rows = [(float(v % 37), v % 2 == 0) for v in range(1000)]
-    df = spark.createDataFrame(rows, ["v", "b"])
-    out = psi_drift(df, "v", F.col("b")).collect()
+    df = spark.createDataFrame(rows, ["value", "b"])
+    out = psi_drift(df, F.col("b")).collect()
     assert len(out) == 10
     assert sum(abs(r.psi_term) for r in out) < 0.01
 
@@ -123,20 +123,23 @@ def test_psi_shifted_population_detects_drift(spark):
     rows = [(float(v % 50), False) for v in range(1000)] + [
         (float(v % 50) + 40.0, True) for v in range(1000)
     ]
-    df = spark.createDataFrame(rows, ["v", "b"])
-    out = psi_drift(df, "v", F.col("b")).collect()
+    df = spark.createDataFrame(rows, ["value", "b"])
+    out = psi_drift(df, F.col("b")).collect()
     assert sum(r.psi_term for r in out) > 0.5  # "significant drift" band
     # every bin emits a row even if one side is empty there
     assert {r.bin for r in out} == set(range(10))
 
 
 def test_covariance_matrix_known_values(spark):
-    # three 2-d vectors with hand-computable covariance:
-    # x = [1,2,3], y = [2,4,6] -> var(x)=1, cov(x,y)=2, var(y)=4 (n-1 denom)
-    rows = [([1.0, 2.0],), ([2.0, 4.0],), ([3.0, 6.0],)]
+    # three 64-d vectors with hand-computable covariance in dims 0 and 1:
+    # x = [1,2,3], y = [2,4,6] -> var(x)=1, cov(x,y)=2, var(y)=4 (n-1
+    # denom); the 62 constant dims covary 0 with everything
+    rows = [([1.0, 2.0] + [0.5] * 62,), ([2.0, 4.0] + [0.5] * 62,), ([3.0, 6.0] + [0.5] * 62,)]
     df = spark.createDataFrame(rows, "embedding array<double>")
-    out = {(r.i, r.j): r.cov for r in covariance_matrix(df, dim=2).collect()}
-    assert out == {(0, 0): 1.0, (0, 1): 2.0, (1, 1): 4.0}
+    out = {(r.i, r.j): r.cov for r in covariance_matrix(df).collect()}
+    want = {(i, j): 0.0 for i in range(64) for j in range(i, 64)}
+    want.update({(0, 0): 1.0, (0, 1): 2.0, (1, 1): 4.0})
+    assert out == want
 
 
 def test_covariance_matrix_zero_is_positive(spark):
@@ -144,9 +147,9 @@ def test_covariance_matrix_zero_is_positive(spark):
     # cross-engine hash canonicalizes by repr)
     import math
 
-    rows = [([5.0, float(i)],) for i in range(4)]
+    rows = [([5.0, float(i)] + [-2.0] * 62,) for i in range(4)]
     df = spark.createDataFrame(rows, "embedding array<double>")
-    out = {(r.i, r.j): r.cov for r in covariance_matrix(df, dim=2).collect()}
+    out = {(r.i, r.j): r.cov for r in covariance_matrix(df).collect()}
     assert out[(0, 0)] == 0.0 and math.copysign(1.0, out[(0, 0)]) > 0
     assert out[(0, 1)] == 0.0 and math.copysign(1.0, out[(0, 1)]) > 0
 
@@ -158,7 +161,7 @@ def test_covariance_twins_identical(spark, sf_dir):
     from odbc2parquet_spark.operators.drift import covariance_matrix_decimal
 
     emb = load_table(spark, sf_dir, "embeddings")
-    fast = {(r.i, r.j): (r.n, r.cov) for r in covariance_matrix(emb, dim=64).collect()}
+    fast = {(r.i, r.j): (r.n, r.cov) for r in covariance_matrix(emb).collect()}
     slow = {
         (r.i, r.j): (r.n, r.cov)
         for r in covariance_matrix_decimal(emb, dim=64).collect()
@@ -170,14 +173,14 @@ def test_correlation_matrix_known_values(spark):
     from odbc2parquet_spark.operators.drift import correlation_matrix
 
     # dim0 and dim1 perfectly correlated, dim2 anti-correlated with dim0,
-    # dim3 constant (zero variance -> NULL)
+    # dims 3..63 constant (zero variance -> NULL)
     rows = [
-        ([1.0, 2.0, -1.0, 7.0],),
-        ([2.0, 4.0, -2.0, 7.0],),
-        ([3.0, 6.0, -3.0, 7.0],),
+        ([1.0, 2.0, -1.0] + [7.0] * 61,),
+        ([2.0, 4.0, -2.0] + [7.0] * 61,),
+        ([3.0, 6.0, -3.0] + [7.0] * 61,),
     ]
     df = spark.createDataFrame(rows, "embedding array<double>")
-    out = {(r.i, r.j): r.corr for r in correlation_matrix(df, dim=4).collect()}
+    out = {(r.i, r.j): r.corr for r in correlation_matrix(df).collect()}
     assert out[(0, 0)] == 1.0 and out[(1, 1)] == 1.0
     assert out[(0, 1)] == 1.0
     assert out[(0, 2)] == -1.0
@@ -196,7 +199,7 @@ def test_cusum_changepoint_level_shift(spark):
         for d in range(20)
     ]
     df = spark.createDataFrame(rows, "ts timestamp, event_type string, value double")
-    out = cusum_changepoint(df, "ts", "value", "event_type").collect()
+    out = cusum_changepoint(df).collect()
     assert len(out) == 1
     r = out[0]
     assert r.n_days == 20
@@ -210,8 +213,8 @@ def test_psi_constant_column_collapses_to_bin0(spark):
     zero-width divide: all rows land in bin 0, the other bins emit their
     smoothed-empty terms, and counts reconcile with the totals."""
     rows = [(7.0, v % 2 == 0) for v in range(100)]
-    df = spark.createDataFrame(rows, ["v", "b"])
-    out = {r.bin: r for r in psi_drift(df, "v", F.col("b")).collect()}
+    df = spark.createDataFrame(rows, ["value", "b"])
+    out = {r.bin: r for r in psi_drift(df, F.col("b")).collect()}
     assert set(out) == set(range(10))
     assert out[0].n_a == 50 and out[0].n_b == 50
     assert all(out[b].n_a == 0 and out[b].n_b == 0 for b in range(1, 10))
@@ -228,16 +231,16 @@ def test_covariance_large_magnitude_chunked_exact(spark):
     from odbc2parquet_spark.operators.drift import covariance_matrix_decimal
 
     rows = [
-        ([1000.0 - i * 0.5, -999.0 + i * 0.25],)
+        ([1000.0 - i * 0.5, -999.0 + i * 0.25] + [0.0] * 62,)
         for i in range(200)
     ]
     df = spark.createDataFrame(rows, "embedding array<double>").coalesce(1)
-    fast = {(r.i, r.j): (r.n, r.cov) for r in covariance_matrix(df, dim=2).collect()}
+    fast = {(r.i, r.j): (r.n, r.cov) for r in covariance_matrix(df).collect()}
     slow = {
         (r.i, r.j): (r.n, r.cov)
-        for r in covariance_matrix_decimal(df, dim=2).collect()
+        for r in covariance_matrix_decimal(df, dim=64).collect()
     }
-    assert fast == slow and len(fast) == 3
+    assert fast == slow and len(fast) == 64 * 65 // 2
     # sanity: the values are the right order of magnitude, not wrapped
     assert fast[(0, 0)][1] > 0 and fast[(1, 1)][1] > 0
 
@@ -254,9 +257,9 @@ def test_two_pass_ops_leave_no_persistent_rdds(spark):
     df = spark.createDataFrame([(i, (i * 7) % 5 + 1) for i in range(300)], ["doc_id", "x"])
     prefix_sums(df, ["doc_id"], ["x"]).count()
     iv = spark.createDataFrame([(i, i + 3) for i in range(300)], ["s", "e"])
-    sweep_line_concurrency(iv, "s", "e").count()
-    pack_shards_two_pass(df.withColumnRenamed("x", "n_tokens"), budget=50).count()
-    pps_sample(df, "x", k=10).count()
+    sweep_line_concurrency(iv).count()
+    pack_shards_two_pass(df.withColumnRenamed("x", "n_tokens")).count()
+    pps_sample(df.withColumnRenamed("x", "n_chars")).count()
     assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == 0
 
 
@@ -275,7 +278,7 @@ _FIXPOINT_RUNS = {
     "connected_components_star": lambda nodes, edges, pairs: graph.connected_components_star(
         nodes, pairs
     ),
-    "k_core": lambda nodes, edges, pairs: graph.k_core(pairs, 1),
+    "k_core": lambda nodes, edges, pairs: graph.k_core(pairs),
     "pagerank_int": lambda nodes, edges, pairs: graph.pagerank_int(
         nodes, graph.out_degree_weighted(edges), n_nodes=20
     ),
@@ -344,23 +347,23 @@ def test_weighted_median_known_values(spark):
 
     # values 1..4 with weights 1,1,1,7: total 10, half 5 -> value 4
     df = spark.createDataFrame(
-        [(1.0, 1), (2.0, 1), (3.0, 1), (4.0, 7)], ["v", "w"]
+        [(1.0, 1), (2.0, 1), (3.0, 1), (4.0, 7)], ["l_extendedprice", "l_quantity"]
     )
-    r = weighted_median(df, "v", "w").collect()[0]
+    r = weighted_median(df).collect()[0]
     assert r.wmedian == 4.0 and r.w_total == 10 and r.n_distinct == 4
 
     # symmetric weights: lower weighted median at the first value
     # reaching half the total (2*cum >= W picks 2: cum(2)=2, W=4)
     df2 = spark.createDataFrame(
-        [(1.0, 1), (2.0, 1), (3.0, 1), (4.0, 1)], ["v", "w"]
+        [(1.0, 1), (2.0, 1), (3.0, 1), (4.0, 1)], ["l_extendedprice", "l_quantity"]
     )
-    assert weighted_median(df2, "v", "w").collect()[0].wmedian == 2.0
+    assert weighted_median(df2).collect()[0].wmedian == 2.0
 
     # duplicate values merge their weights before the cumulative pass
     df3 = spark.createDataFrame(
-        [(5.0, 1), (5.0, 1), (1.0, 1)], ["v", "w"]
+        [(5.0, 1), (5.0, 1), (1.0, 1)], ["l_extendedprice", "l_quantity"]
     )
-    r3 = weighted_median(df3, "v", "w").collect()[0]
+    r3 = weighted_median(df3).collect()[0]
     assert r3.wmedian == 5.0 and r3.n_distinct == 2
 
 
@@ -376,14 +379,12 @@ def test_sweep_line_boundary_proxy_exact(spark):
     iv = spark.createDataFrame(
         [((i * 13) % 97, (i * 13) % 97 + 5) for i in range(500)], ["s", "e"]
     )
-    base = sweep_line_concurrency(iv, "s", "e")
+    base = sweep_line_concurrency(iv)
     # good proxy: the start column itself
     proxy = iv.select(F.col("s").alias("p"))
-    good = sweep_line_concurrency(iv, "s", "e", boundary_source=(proxy, "p"))
+    good = sweep_line_concurrency(iv, boundary_source=(proxy, "p"))
     # pathological proxy: constant column -> a single bucket
-    bad = sweep_line_concurrency(
-        iv, "s", "e", boundary_source=(iv.select(F.lit(0.0).alias("p")), "p")
-    )
+    bad = sweep_line_concurrency(iv, boundary_source=(iv.select(F.lit(0.0).alias("p")), "p"))
     want = sorted(map(tuple, base.collect()))
     assert sorted(map(tuple, good.collect())) == want
     assert sorted(map(tuple, bad.collect())) == want
@@ -398,7 +399,7 @@ def test_bucketing_date_keys(spark):
 
     rows = [(datetime.date(2024, 1, 1) + datetime.timedelta(days=i), i) for i in range(200)]
     df = spark.createDataFrame(rows, "d date, x long")
-    b = df.withColumn("_bk_", order_bucket_col(df, "d", 4))
+    b = df.withColumn("_bk_", order_bucket_col(df, "d"))
     got = b.groupBy("_bk_").count().collect()
     assert sum(r["count"] for r in got) == 200
     assert len(got) >= 2  # genuinely split, monotone boundaries

@@ -113,8 +113,6 @@ def test_banded_auto_recall_is_exact_at_any_band_width(spark):
     for bb in (4, 15):
         banded = {
             (r.id_a, r.id_b)
-            for r in simhash_banded_pairs(
-                sig, max_hamming=3, bits=4 * bb, bands=4
-            ).collect()
+            for r in simhash_banded_pairs(sig, bits=4 * bb).collect()
         }
         assert banded == truth, f"bb={bb}: banded != all-pairs truth"

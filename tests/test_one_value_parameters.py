@@ -1,21 +1,27 @@
-"""Every defaulted parameter in the package is a value some caller outside tests sets.
+"""Every parameter in the package takes more than one value from its callers outside tests.
 
-An AST walk, no Spark. A parameter whose every caller passes the default,
-or nothing, only ever takes one value; it is a constant spelled as a knob,
-so it belongs in the body as its literal. The scope is the top-level
-functions of the whole package except ``session.py`` and ``__main__.py``
-(a nested function's defaults bind closure values, not options), whose
-``env``/``argv``/``master`` parameters are test-substitution and
-deployment points. Callers are every call in the package, ``tools/``,
-``bench.py``, ``__spark_entry__.py`` and ``xferbench/`` — the callers
+An AST walk, no Spark. A parameter that every caller gives the same value
+only ever takes that value; it is a constant spelled as a knob, so it
+belongs in the body. The scope is the top-level functions of the whole
+package except ``session.py`` and ``__main__.py`` (a nested function's
+parameters bind closure values, not options), whose ``env``/``argv``/
+``master`` parameters are test-substitution and deployment points.
+Callers are every call in the package, ``tools/``, ``bench.py``,
+``__spark_entry__.py`` and ``xferbench/`` — the callers
 ``test_reachability.py`` counts: the product is the CLI plus the query
-registry, so a value only a test sets is not a reason for a knob. Calls
-resolve by name to every in-scope function of that name. A call sets a
-parameter when it passes an expression other than the default,
-positionally or by keyword, or when it forwards ``*args``/``**kwargs``.
-Passing the caller's own defaulted parameter of the same default only
-sets the parameter if that one is set in turn (a fixpoint), so a knob
-relayed through a chain of knobs is still one knob.
+registry, so a value only a test passes is not a reason for a knob.
+Calls resolve by name to every in-scope function of that name.
+
+Each call gives each parameter one value. An omitted argument gives the
+default; a literal gives itself (anything ``ast.literal_eval`` accepts); a
+bare name gives its module's value, when the module binds the name
+exactly once, to a literal, and no enclosing function binds it; the
+caller's own in-scope parameter, passed on unchanged, gives whatever
+values that one takes (a fixpoint, so a knob relayed through a chain of
+knobs is still one knob). Any other expression, a parameter no call
+reaches and no default covers, and ``*args``/``**kwargs`` forwarding give
+a value of their own. A parameter with one value, or none, fails; one
+without a default only when some call reaches it.
 
 ``ALLOWED`` keeps the few a test has to move to reach behaviour that
 production has too: a stand-in for an outside resource, generators of
@@ -39,6 +45,7 @@ PACKAGE = REPO / "odbc2parquet_spark"
 OUT_OF_SCOPE = {PACKAGE / "session.py", PACKAGE / "__main__.py"}
 CALLERS = [PACKAGE, REPO / "tools", REPO / "bench.py", REPO / "__spark_entry__.py", REPO / "xferbench"]
 FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+SETS = object()  # a value that is not the same at every call
 
 _CAP = "production cap; a test lowers it to reach the dropped-bucket branch"
 ALLOWED = {
@@ -85,12 +92,53 @@ def _params(fn) -> list[str]:
     return [p.arg for p in a.posonlyargs + a.args + a.kwonlyargs]
 
 
+def _literal(expr: ast.expr):
+    """``(type, repr)`` of a literal expression, else ``SETS``."""
+    try:
+        v = ast.literal_eval(expr)
+    except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
+        return SETS
+    return type(v).__name__, repr(v)
+
+
+def _bindings(node) -> list[str]:
+    """Every name ``node`` binds outside its nested functions, once per binding."""
+    out, todo = [], [node]
+    while todo:
+        for c in ast.iter_child_nodes(todo.pop()):
+            if isinstance(c, (*FUNCS, ast.ClassDef)):
+                out.append(c.name)
+            elif isinstance(c, ast.alias):
+                out.append((c.asname or c.name).partition(".")[0])
+            elif isinstance(c, ast.Name) and isinstance(c.ctx, ast.Store):
+                out.append(c.id)
+            if not isinstance(c, (*FUNCS, ast.Lambda)):
+                todo.append(c)
+    return out
+
+
+def _constants(tree: ast.Module) -> dict[str, tuple[str, str]]:
+    """The module's names bound exactly once, by ``name = <literal>``, with their values."""
+    names = _bindings(tree)
+    return {
+        stmt.targets[0].id: _literal(stmt.value)
+        for stmt in tree.body
+        if isinstance(stmt, ast.Assign)
+        and len(stmt.targets) == 1
+        and isinstance(stmt.targets[0], ast.Name)
+        and names.count(stmt.targets[0].id) == 1
+        and _literal(stmt.value) is not SETS
+    }
+
+
 def one_value() -> list[tuple[str, str, str]]:
     """(module path relative to the package, function, parameter) of every
-    in-scope defaulted parameter that no caller sets."""
+    in-scope parameter that its callers give one value, or none."""
     defs: dict[tuple[str, str], ast.AST] = {}
     by_name: dict[str, list[tuple[str, str]]] = {}
     trees = {path: ast.parse(path.read_text(), str(path)) for path in _py_files()}
+    consts = {path: _constants(tree) for path, tree in trees.items()}
+    module_of = {}
     for path, tree in trees.items():
         if PACKAGE in path.parents and path not in OUT_OF_SCOPE:
             module = path.relative_to(PACKAGE).as_posix()
@@ -98,64 +146,79 @@ def one_value() -> list[tuple[str, str, str]]:
                 if isinstance(stmt, FUNCS):
                     defs[(module, stmt.name)] = stmt
                     by_name.setdefault(stmt.name, []).append((module, stmt.name))
-    defaults = {key: _defaults(fn) for key, fn in defs.items()}
+                    module_of[(module, stmt.name)] = path
     key_of = {id(fn): key for key, fn in defs.items()}
+    values: dict[tuple, set] = {(key, p): set() for key, fn in defs.items() for p in _params(fn)}
+    reached: set[tuple] = set()
+    relays: list[tuple[tuple, tuple]] = []
 
-    set_: set[tuple[tuple[str, str], str]] = set()
-    relays: list[tuple[tuple[tuple[str, str], str], tuple[tuple[str, str], str]]] = []
-
-    def relayed_from(name: ast.Name, scopes: list, default: ast.expr):
-        """The enclosing in-scope parameter ``name`` reads, when it has the same default."""
+    def value_of(expr, scopes, path):
+        """A value, or the (function, parameter) the expression relays."""
+        if not isinstance(expr, ast.Name):
+            return _literal(expr)
         for fn in reversed(scopes):
-            if name.id in _params(fn):
-                key = key_of.get(id(fn))
-                d = defaults[key].get(name.id) if key else None
-                return (key, name.id) if d is not None and ast.dump(d) == ast.dump(default) else None
-        return None
+            rebound = expr.id in _bindings(fn)
+            if expr.id in _params(fn) and id(fn) in key_of and not rebound:
+                return key_of[id(fn)], expr.id
+            if expr.id in _params(fn) or rebound:
+                return SETS
+        return consts[path].get(expr.id, SETS)
 
-    def visit(node, scopes):
+    def visit(node, scopes, path):
         for child in ast.iter_child_nodes(node):
             if isinstance(child, (*FUNCS, ast.Lambda)):
-                visit(child, scopes + [child])
+                visit(child, scopes + [child], path)
                 continue
             if isinstance(child, ast.Call):
                 f = child.func
                 name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
                 for key in by_name.get(name, ()):
-                    dflt = defaults[key]
-                    if any(isinstance(a, ast.Starred) for a in child.args) or any(
+                    fn, dflt = defs[key], _defaults(defs[key])
+                    forwards = any(isinstance(a, ast.Starred) for a in child.args) or any(
                         k.arg is None for k in child.keywords
-                    ):
-                        set_.update((key, p) for p in dflt)
-                        continue
-                    a = defs[key].args
-                    pos = [p.arg for p in a.posonlyargs + a.args]
-                    binds = list(zip(pos, child.args)) + [(k.arg, k.value) for k in child.keywords]
-                    for p, expr in binds:
-                        if p not in dflt or ast.dump(expr) == ast.dump(dflt[p]):
-                            continue
-                        src = relayed_from(expr, scopes, dflt[p]) if isinstance(expr, ast.Name) else None
-                        if src:
-                            relays.append(((key, p), src))
+                    )
+                    pos = [p.arg for p in fn.args.posonlyargs + fn.args.args]
+                    binds = dict(zip(pos, child.args))
+                    binds.update((k.arg, k.value) for k in child.keywords)
+                    for p in _params(fn):
+                        reached.add((key, p))
+                        expr = binds.get(p)
+                        if forwards:
+                            v = SETS
+                        elif expr is None or (p in dflt and ast.dump(expr) == ast.dump(dflt[p])):
+                            if p not in dflt:
+                                continue
+                            v = value_of(dflt[p], [], module_of[key])
                         else:
-                            set_.add((key, p))
-            visit(child, scopes)
+                            v = value_of(expr, scopes, path)
+                        if isinstance(v, tuple) and v[0] in defs:
+                            relays.append(((key, p), v))
+                        else:
+                            values[(key, p)].add(v)
+            visit(child, scopes, path)
 
-    for tree in trees.values():
-        visit(tree, [])
+    for path, tree in trees.items():
+        visit(tree, [], path)
+    for (key, p), vs in values.items():
+        if (key, p) not in reached and p not in _defaults(defs[key]):
+            vs.add(SETS)
     grew = True
     while grew:
         grew = False
         for target, src in relays:
-            if src in set_ and target not in set_:
-                set_.add(target)
+            if not values[src] <= values[target]:
+                values[target] |= values[src]
                 grew = True
-    return sorted((m, f, p) for (m, f), dflt in defaults.items() for p in dflt if ((m, f), p) not in set_)
+    return sorted(
+        (m, f, p)
+        for ((m, f), p), vs in values.items()
+        if SETS not in vs and len(vs) <= 1 and (p in _defaults(defs[(m, f)]) or ((m, f), p) in reached)
+    )
 
 
-def test_every_defaulted_parameter_is_set_by_some_caller():
+def test_every_parameter_takes_more_than_one_value_outside_tests():
     found = [key for key in one_value() if key not in ALLOWED]
-    assert not found, "only ever the default, fold into the body: " + ", ".join(
+    assert not found, "only ever one value, fold into the body: " + ", ".join(
         f"{m}:{f}({p})" for m, f, p in found
     )
 

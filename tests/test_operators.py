@@ -38,7 +38,7 @@ def test_word_shingles(docs):
 
 
 def test_jaccard_pairs_finds_near_dup(docs):
-    pairs = D.jaccard_pairs(D.word_shingles(docs), threshold=0.5).collect()
+    pairs = D.jaccard_pairs(D.word_shingles(docs)).collect()
     got = {(r.id_a, r.id_b) for r in pairs}
     assert (1, 2) in got  # identical
     assert (1, 3) in got and (2, 3) in got  # near dup (6/8 shingles shared)
@@ -84,7 +84,7 @@ def test_brute_force_topk_self_similarity(spark):
 def test_lsh_signature_deterministic(spark):
     rows = [(1, [0.5] * 64), (2, [0.5] * 64), (3, [-0.5] * 64)]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    sig = {r.vec_id: r.sig for r in S.lsh_signatures(emb).collect()}
+    sig = {r.vec_id: r.sig for r in S.lsh_signatures(emb, S.N_PLANES).collect()}
     assert sig[1] == sig[2]  # identical vectors -> identical signature
     assert sig[1] != sig[3]  # opposite vector flips every plane's sign
     assert sig[1] ^ sig[3] == (1 << 16) - 1
@@ -136,15 +136,6 @@ def test_frame_sample_short_payload_empty(docs):
 
 
 @pytest.mark.slow
-def test_simhash_banded_matches_all_pairs(docs):
-    """Pigeonhole guarantee: bands > max_hamming -> banded == all-pairs."""
-    sig = D.simhash(docs)
-    allp = {(r.id_a, r.id_b, r.hamming) for r in D.simhash_near_pairs(sig).collect()}
-    band = {(r.id_a, r.id_b, r.hamming) for r in D.simhash_banded_pairs(sig).collect()}
-    assert band == allp
-
-
-@pytest.mark.slow
 def test_simhash_banded_production_spec_zero_recall_loss(docs):
     """CORPUS-LEVEL recall proof at dd_simhash_banded's registered
     operating point (hamming<=3, 4 bands of 8 bits, 10k bucket cap): the
@@ -161,15 +152,10 @@ def test_simhash_banded_production_spec_zero_recall_loss(docs):
     }
     banded = {
         (r.id_a, r.id_b, r.hamming)
-        for r in D.simhash_banded_pairs(sig, max_hamming=3, bands=4).collect()
+        for r in D.simhash_banded_pairs(sig).collect()
     }
     assert banded == truth
     assert truth, "degenerate corpus: the recall proof proved nothing"
-
-
-def test_simhash_banded_rejects_too_few_bands(docs):
-    with pytest.raises(ValueError):
-        D.simhash_banded_pairs(D.simhash(docs), max_hamming=8)
 
 
 def test_ivf_assign_picks_nearest_centroid(spark):
@@ -189,12 +175,22 @@ def test_ivf_search_probes_subset(spark):
 
     rows = [(i, [math.cos(i / 7.0), math.sin(i / 7.0)]) for i in range(40)]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    cent = S.ivf_seed_centroids(emb, 4)
-    out = S.ivf_search(emb, emb.filter("vec_id = 20"), cent, nprobe=2).collect()
+    cent = S.ivf_seed_centroids(emb)
+    out = S.ivf_search(emb, emb.filter("vec_id = 20"), cent).collect()
     assert len(out) == 10
     ranked = [r.neighbor_id for r in sorted(out, key=lambda r: r.rank)]
     # nearest angular neighbors of 20 (within probed cells) come first
     assert set(ranked[:2]) <= {18, 19, 21, 22}
+    # every neighbor lives in one of the 4 cells nearest the query: the
+    # 16 seed cells are vectors 0..15, a vector's cell its most-cosine
+    # seed (lowest id on ties)
+    def cos4(i, j):
+        (a, b), (c, d) = rows[i][1], rows[j][1]
+        return round((a * c + b * d) / math.sqrt((a * a + b * b) * (c * c + d * d)), 4)
+
+    cell = {i: max(range(16), key=lambda c: (cos4(i, c), -c)) for i in range(40)}
+    probed = sorted(range(16), key=lambda c: (-cos4(20, c), c))[:4]
+    assert {r.neighbor_id for r in out} <= {i for i in range(40) if cell[i] in probed}
     # exact ranking agrees with brute force restricted to the probed cells
     assert all(float(r.cosine4) <= 1.0 for r in out)
 
@@ -340,11 +336,11 @@ def test_rollup_cascade_matches_direct(spark, sf_dir):
 def test_kmv_estimate_accuracy(spark):
     from odbc2parquet_spark.operators.sketches import heavy_hitters, kmv_distinct_estimate
 
-    df = spark.range(0, 20000).selectExpr("id % 5000 as v")  # 5000 distinct
-    est = kmv_distinct_estimate(df, "v").first()
+    df = spark.range(0, 20000).selectExpr("id % 5000 as o_custkey")  # 5000 distinct
+    est = kmv_distinct_estimate(df).first()
     assert est.k_used == 256
     assert abs(est.estimate - 5000) / 5000 < 0.15  # ~1/sqrt(k) error regime
-    small = kmv_distinct_estimate(spark.range(0, 100).selectExpr("id as v"), "v").first()
+    small = kmv_distinct_estimate(spark.range(0, 100).selectExpr("id as o_custkey")).first()
     assert small.estimate == 100.0  # exact below k
     hh = heavy_hitters(
         spark.createDataFrame([("a",)] * 5 + [("b",)] * 3 + [("c",)] * 3, ["v"]), "v", 2
@@ -383,7 +379,7 @@ def test_ivf_partition_pruned_serving(spark, tmp_path):
     from odbc2parquet_spark.sinks.parquet_sink import SinkOptions, write_parquet
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    cent = S.ivf_seed_centroids(emb, 8)
+    cent = S.ivf_seed_centroids(emb)
     indexed = emb.join(S.ivf_assign(emb, cent).select("vec_id", "centroid_id"), "vec_id")
     out = str(tmp_path / "ivf_index")
     write_parquet(indexed, out, SinkOptions(partition_by=("centroid_id",)))
@@ -405,8 +401,8 @@ def test_pack_shards_two_pass_equals_window(spark):
     rng = random.Random(7)
     rows = [(i, rng.randrange(1, 400)) for i in range(3000)]
     df = spark.createDataFrame(rows, ["doc_id", "n_tokens"])
-    a = {r.doc_id: r.shard for r in pack_shards(df, 1000).collect()}
-    b = {r.doc_id: r.shard for r in pack_shards_two_pass(df, 1000).collect()}
+    a = {r.doc_id: r.shard for r in pack_shards(df, 500).collect()}
+    b = {r.doc_id: r.shard for r in pack_shards_two_pass(df).collect()}
     assert a == b
     # shards are contiguous in doc order and sized near the budget
     assert max(a.values()) > 100
@@ -423,16 +419,20 @@ def test_bigram_surprisal_separates_gibberish(spark):
 def test_mixture_sample_hits_target_proportions(spark):
     from odbc2parquet_spark.operators.sampling import mixture_sample
 
-    rows = [(i, "a") for i in range(8000)] + [(i + 100000, "b") for i in range(2000)]
-    df = spark.createDataFrame(rows, ["k", "src"])
-    # target 50/50: b is the binding source (2000/0.5=4000 < 8000/0.5=16000)
-    out = mixture_sample(df, "src", "k", {"a": 0.5, "b": 0.5})
-    got = {r.src: r.n for r in out.groupBy("src").count().withColumnRenamed("count", "n").collect()}
-    assert got["b"] == 2000  # binding source kept whole
-    assert abs(got["a"] - 2000) / 2000 < 0.1  # ~rate 0.25 of 8000
+    sizes = {"src0": 8000, "src1": 2000, "src2": 1000, "other": 500}
+    rows = [(s * 100_000 + i, src) for s, (src, n) in enumerate(sizes.items()) for i in range(n)]
+    df = spark.createDataFrame(rows, ["doc_id", "source"])
+    # target 50/25/25: src2 is the binding source (1000/0.25 = 4000 <
+    # 2000/0.25 = 8000 < 8000/0.5 = 16000), sources outside it drop
+    out = mixture_sample(df)
+    got = {r.source: r.n for r in out.groupBy("source").count().withColumnRenamed("count", "n").collect()}
+    assert got["src2"] == 1000  # binding source kept whole
+    assert abs(got["src0"] - 2000) / 2000 < 0.1  # ~rate 0.25 of 8000
+    assert abs(got["src1"] - 1000) / 1000 < 0.1  # ~rate 0.5 of 2000
+    assert "other" not in got
     # deterministic across partitionings
-    out2 = mixture_sample(df.repartition(13), "src", "k", {"a": 0.5, "b": 0.5})
-    assert {r.k for r in out.collect()} == {r.k for r in out2.collect()}
+    out2 = mixture_sample(df.repartition(13))
+    assert {r.doc_id for r in out.collect()} == {r.doc_id for r in out2.collect()}
 
 
 def test_incremental_exact_dedup(spark):
@@ -491,7 +491,7 @@ def test_contamination_excludes_probes_and_counts(spark):
         ["doc_id", "text"],
     )
     probes = docs.filter("doc_id = 1")
-    rows = {r.doc_id: r for r in contamination(docs, probes, n=2).collect()}
+    rows = {r.doc_id: r for r in contamination(docs, probes).collect()}
     assert 1 not in rows
     assert rows[2].n_contaminated == 1 and rows[2].contamination_ratio == 0.5
     assert rows[3].n_contaminated == 0
@@ -501,11 +501,12 @@ def test_boilerplate_ngrams_threshold(spark):
     from odbc2parquet_spark.operators.text import boilerplate_ngrams
 
     docs = spark.createDataFrame(
-        [(i, "common pair unique%d tail" % i) for i in range(5)],
+        [(i, "common pair unique%d tail" % i) for i in range(35)]
+        + [(100 + i, "rare pair only%d" % i) for i in range(34)],
         ["doc_id", "text"],
     )
-    out = {r.g: r.n_docs for r in boilerplate_ngrams(docs, n=2, min_docs=5).collect()}
-    assert out == {"common pair": 5}
+    out = {r.g: r.n_docs for r in boilerplate_ngrams(docs).collect()}
+    assert out == {"common pair": 35}  # "rare pair" in 34 docs stays under
 
 
 def test_chunk_documents_windows(spark):
@@ -708,28 +709,35 @@ def test_resample_forward_fill_gaps(spark):
 def test_pq_codes_pick_nearest_subspace_centroid(spark):
     from odbc2parquet_spark.operators.similarity import pq_assign, pq_codebook
 
-    # 8 subspaces of 8: the even ones repeat the first 2-value pattern
-    # below 4 times, the odd ones the second (distances scale by 4,
-    # nearest centroids do not change); seeds = vecs 0 and 1
-    vecs = spark.createDataFrame(
-        [
-            (i, (v[:2] * 4 + v[2:] * 4) * 4)
-            for i, v in [
-                (0, [0.0, 0.0, 10.0, 10.0]),
-                (1, [5.0, 5.0, 0.0, 0.0]),
-                (2, [0.1, 0.1, 0.2, 0.1]),   # sub0 near seed0, sub1 near seed1
-                (3, [4.9, 5.2, 9.0, 9.0]),   # sub0 near seed1, sub1 near seed0
-            ]
-        ],
-        ["vec_id", "embedding"],
-    )
-    cb = pq_codebook(vecs, k=2)
+    # 32 subspaces of 2 dims, in 8 runs of 4: the even runs repeat the
+    # first 2-value pattern below, the odd runs the second. The 256 seeds
+    # are vectors 0..255: 0 and 1 carry the patterns, 2..255 sit far away;
+    # vectors 1000 and 1001 are coded against them
+    def vec(v):
+        return (v[:2] * 4 + v[2:] * 4) * 4
+
+    pats = [(0, [0.0, 0.0, 10.0, 10.0]), (1, [5.0, 5.0, 0.0, 0.0])]
+    pats += [(i, [1000.0] * 4) for i in range(2, 256)]
+    pats += [
+        (1000, [0.1, 0.1, 0.2, 0.1]),   # even runs near seed 0, odd near seed 1
+        (1001, [4.9, 5.2, 9.0, 9.0]),   # even runs near seed 1, odd near seed 0
+    ]
+    vecs = spark.createDataFrame([(i, vec(v)) for i, v in pats], ["vec_id", "embedding"])
+    cb = pq_codebook(vecs)
     out = {(r.vec_id, r.subspace): r.code for r in pq_assign(vecs, cb).collect()}
-    for even, odd in ((0, 1), (2, 3), (4, 5), (6, 7)):
-        assert out[(2, even)] == 0 and out[(2, odd)] == 1
-        assert out[(3, even)] == 1 and out[(3, odd)] == 0
+    for s in range(32):
+        even = (s // 4) % 2 == 0
+        assert out[(1000, s)] == (0 if even else 1)
+        assert out[(1001, s)] == (1 if even else 0)
         # self-coding: a seed's own slices code to itself (distance 0)
-        assert out[(0, even)] == 0 and out[(0, odd)] == 0
+        assert out[(0, s)] == 0 and out[(1, s)] == 1
+    # brute force: the nearest seed slice per subspace, lowest id on ties
+    seeds = {i: vec(v) for i, v in pats if i < 256}
+    for i, v in pats:
+        for s in range(32):
+            d2 = {c: sum((v_ - c_) ** 2 for v_, c_ in zip(vec(v)[2 * s:2 * s + 2], sv[2 * s:2 * s + 2]))
+                  for c, sv in seeds.items()}
+            assert out[(i, s)] == min(d2, key=lambda c: (d2[c], c)), (i, s)
 
 
 def test_pq_assign_kernel_bit_exact_vs_expression_spec(spark, sf_dir):
@@ -743,14 +751,16 @@ def test_pq_assign_kernel_bit_exact_vs_expression_spec(spark, sf_dir):
     from odbc2parquet_spark.operators.similarity import pq_assign, pq_codebook
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    m, sub = 16, 4
-    cb = pq_codebook(emb, m=m, k=24)
+    m, sub = 32, 2
+    cb = pq_codebook(emb)
+    # the non-seed vectors (the 256 lowest ids are the codewords)
+    coded = emb.filter("vec_id >= 400")
     got = {
         (r.vec_id, r.subspace): (r.code, r.dist4)
-        for r in pq_assign(emb, cb, m=m).collect()
+        for r in pq_assign(coded, cb).collect()
     }
     # independent spec: expression-level melt + struct-min on raw d2
-    melted = emb.select(
+    melted = coded.select(
         F.col("vec_id"),
         F.explode(
             F.array(*[
@@ -784,16 +794,14 @@ def test_pq_assign_kernel_bit_exact_vs_expression_spec(spark, sf_dir):
         )
     )
     want = {(r.vec_id, r.subspace): (r.code, r.dist4) for r in spec.collect()}
-    assert got == want and len(want) == emb.count() * m
+    assert got == want and len(want) == coded.count() * m
 
 
-def test_pq_adc_search_finds_exact_match_and_rejects_lossy_split(spark):
-    import pytest
-
+def test_pq_adc_search_finds_exact_match(spark):
     from odbc2parquet_spark.operators.similarity import pq_adc_topk
 
-    # 8 subspaces of 8; vec 5 is identical to probe 0 -> ADC distance 0,
-    # rank 1
+    # all four vectors are codewords; vec 5 is identical to probe 0 ->
+    # the same codes, ADC distance 0, rank 1
     vecs = spark.createDataFrame(
         [
             (i, (v[:2] * 4 + v[2:] * 4) * 4)
@@ -808,13 +816,9 @@ def test_pq_adc_search_finds_exact_match_and_rejects_lossy_split(spark):
     )
     probes = vecs.filter("vec_id = 0")
     out = {r.rank: (r.neighbor_id, r.adc4) for r in
-           pq_adc_topk(vecs, probes, k_centroids=2).collect()}
+           pq_adc_topk(vecs, probes).collect()}
     assert out[1] == (5, 0.0)  # the exact duplicate codes identically
     assert sorted(out) == [1, 2, 3]  # the three other vectors, within the top 10
-    # a lossy subspace split (64 not divisible by m) must error, not
-    # silently drop trailing dimensions
-    with pytest.raises(ValueError, match="divisible"):
-        pq_adc_topk(vecs, probes, m=3, k_centroids=2)
 
 
 def test_count_min_sketch_never_undercounts(spark):
@@ -822,7 +826,7 @@ def test_count_min_sketch_never_undercounts(spark):
 
     rows = [(w,) for w in ["a"] * 50 + ["b"] * 7 + ["c"] * 1]
     df = spark.createDataFrame(rows, ["w"])
-    sk = count_min_sketch(df, "w")
+    sk = count_min_sketch(df)
     probes = spark.createDataFrame([("a",), ("b",), ("c",), ("zzz",)], ["value"])
     est = {r.value: r.est for r in cms_estimate(sk, probes).collect()}
     assert est["a"] >= 50 and est["b"] >= 7 and est["c"] >= 1  # CMS never undercounts
@@ -870,10 +874,10 @@ def test_knn_graph_ranks_and_symmetry(spark):
 
     # seven near-identical vectors + one orthogonal: the near group should
     # rank each other first wherever LSH buckets them together
-    rows = [(i, [1.0 - 0.01 * i, 0.02 * i, 0.0, 0.0]) for i in range(7)]
-    rows.append((7, [0.0, 0.0, 1.0, 0.0]))
+    rows = [(i, [1.0 - 0.01 * i, 0.02 * i] + [0.0] * 62) for i in range(7)]
+    rows.append((7, [0.0, 0.0, 1.0] + [0.0] * 61))
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    got = knn_graph(df, n_planes=8, dim=4).collect()
+    got = knn_graph(df).collect()
     by_src = {}
     for r in got:
         by_src.setdefault(r["vec_id"], []).append(r)
@@ -1004,26 +1008,25 @@ def test_ivf_silhouette_separated_vs_boundary(spark):
         ivf_silhouette,
     )
 
-    # two orthogonal direction clusters; centroids = lowest-id vector of
-    # each (ids 0 and 1) -> every member is EXACTLY on its centroid ray
+    # two orthogonal direction clusters; of the 16 seed centroids (ids
+    # 0..15) 0 and 1 start them -> every member is EXACTLY on its centroid
+    # ray; seeds 2..15 point away from both and collect in cell 2
     rows = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
-    rows += [(i, [1.0, 0.0]) for i in range(2, 6)]
-    rows += [(i, [0.0, 1.0]) for i in range(6, 10)]
+    rows += [(i, [-1.0, -1.0]) for i in range(2, 16)]
+    rows += [(i, [1.0, 0.0]) for i in range(16, 20)]
+    rows += [(i, [0.0, 1.0]) for i in range(20, 24)]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out = {
-        r["centroid_id"]: r
-        for r in ivf_silhouette(emb, ivf_seed_centroids(emb, 2)).collect()
-    }
-    assert set(out) == {0, 1}
+    out = {r["centroid_id"]: r for r in ivf_silhouette(emb, ivf_seed_centroids(emb)).collect()}
+    assert set(out) == {0, 1, 2}
     assert out[0]["n_vecs"] == 5 and out[1]["n_vecs"] == 5
     # perfectly separated orthogonal clusters score silhouette 1
     assert out[0]["mean_sil"] == 1.0
     assert out[1]["mean_sil"] == 1.0
 
     # a 45-degree boundary vector scores ~0 (equidistant to both cells)
-    rows.append((10, [1.0, 1.0]))
+    rows.append((24, [1.0, 1.0]))
     emb2 = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out2 = ivf_silhouette(emb2, ivf_seed_centroids(emb2, 2))
+    out2 = ivf_silhouette(emb2, ivf_seed_centroids(emb2))
     cell = {r["centroid_id"]: r for r in out2.collect()}
     # the boundary vector tie-breaks into cell 0 and drags its mean down
     assert cell[0]["n_vecs"] == 6
@@ -1118,8 +1121,8 @@ def test_binned_quantiles_within_bin_width(spark):
     from odbc2parquet_spark.operators.sketches import binned_quantiles
 
     vals = [i / 100.0 for i in range(1, 101)]  # 0.01 .. 1.00
-    df = spark.createDataFrame([("a", v) for v in vals], ["g", "v"])
-    row = binned_quantiles(df, ["g"], "v").collect()[0]
+    df = spark.createDataFrame([("a", v) for v in vals], ["event_type", "value"])
+    row = binned_quantiles(df).collect()[0]
     assert row["n"] == 100
     # true p50 = 0.50, p95 = 0.95, p99 = 0.99; estimate within one bin width
     assert abs(row["p50"] - 0.50) <= 0.01 + 1e-9
@@ -1130,9 +1133,9 @@ def test_binned_quantiles_within_bin_width(spark):
 def test_multiprobe_superset_of_single_bucket(spark):
     import math
 
-    rows = [(i, [math.cos(i / 9.0 + d / 50.0) for d in range(8)]) for i in range(60)]
+    rows = [(i, [math.cos(i / 9.0 + d / 50.0) for d in range(64)]) for i in range(60)]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    sig = S.lsh_signatures(emb, 8, 8)
+    sig = S.lsh_signatures(emb, 8)
     single = {(r.id_a, r.id_b) for r in S.lsh_bucket_pairs(sig).collect()}
     multi = {(r.id_a, r.id_b) for r in S.lsh_multiprobe_pairs(sig).collect()}
     assert single <= multi          # probing can only ADD candidates
@@ -1142,7 +1145,7 @@ def test_multiprobe_superset_of_single_bucket(spark):
 def test_banded_pairs_catch_identical_signatures(spark):
     rows = [(1, [0.5] * 64), (2, [0.5] * 64), (3, [-0.5] * 64), (4, [-0.5] * 64)]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    sig = S.lsh_signatures(emb)
+    sig = S.lsh_signatures(emb, S.N_PLANES)
     got = {(r.id_a, r.id_b) for r in S.lsh_banded_pairs(sig).collect()}
     # identical vectors share every band; opposite signatures share none
     assert (1, 2) in got and (3, 4) in got
@@ -1150,10 +1153,7 @@ def test_banded_pairs_catch_identical_signatures(spark):
 
 
 def test_semantic_dedup_cells_prunes_lowest_id_wins(spark):
-    from odbc2parquet_spark.operators.similarity import (
-        ivf_seed_centroids,
-        semantic_dedup_cells,
-    )
+    from odbc2parquet_spark.operators.similarity import semantic_dedup_cells
 
     vecs = spark.createDataFrame(
         [
@@ -1165,7 +1165,11 @@ def test_semantic_dedup_cells_prunes_lowest_id_wins(spark):
         ],
         ["vec_id", "embedding"],
     )
-    out = semantic_dedup_cells(vecs, ivf_seed_centroids(vecs, 2)).collect()
+    # centroids: the two lowest-id vectors
+    cents = vecs.filter("vec_id <= 2").select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
+    )
+    out = semantic_dedup_cells(vecs, cents).collect()
     kept = {r.vec_id for r in out if r.kept}
     assert kept == {1, 2, 7}
     cells = {r.vec_id: r.cell for r in out}
@@ -1325,7 +1329,7 @@ def test_candidate_cap_matches_bruteforce(spark, operator):
         }
         if operator == "simhash_banded":
             sig = spark.createDataFrame(list(sigs.items()), "id long, simhash long")
-            out = D.simhash_banded_pairs(sig, max_hamming=3, bands=4, max_bucket=3)
+            out = D.simhash_banded_pairs(sig, max_bucket=3)
             args = (4, 8, 3)
         else:
             sigs[8] = None
@@ -1551,7 +1555,7 @@ def test_zorder_buckets_are_tight_rectangles(spark):
     pts = spark.createDataFrame(
         [(x, y) for x in range(32) for y in range(32)], ["x", "y"]
     )
-    rows = zorder_bucket_stats(pts, "x", "y").collect()
+    rows = zorder_bucket_stats(pts).collect()
     side = 32 // 2**3
     assert len(rows) == (32 // side) ** 2
     for r in rows:
@@ -1565,7 +1569,7 @@ def test_zorder_key_interleaves_bits(spark):
     from odbc2parquet_spark.operators.clustering import zorder_key
 
     pts = spark.createDataFrame([(0, 0), (1, 0), (0, 1), (1, 1)], ["x", "y"])
-    got = {(r.x, r.y): r.zkey for r in zorder_key(pts, "x", "y").collect()}
+    got = {(r.x, r.y): r.zkey for r in zorder_key(pts).collect()}
     assert got == {(x, y): (x << 18) | (y << 19) for x in (0, 1) for y in (0, 1)}
 
 
@@ -1575,8 +1579,8 @@ def test_skew_profile_flags_hot_key_and_salt(spark):
     from odbc2parquet_spark.operators.joins import skew_profile
 
     rows = [(0,)] * 50 + [(k,) for k in range(1, 51)]
-    df = spark.createDataFrame(rows, ["k"])
-    out = {r.hot_rank: r for r in skew_profile(df, "k").collect()}
+    df = spark.createDataFrame(rows, ["user_id"])
+    out = {r.hot_rank: r for r in skew_profile(df).collect()}
     assert sorted(out) == [1, 2, 3, 4, 5]
     assert out[1].key == "0" and out[1].cnt == 50
     assert out[1].n_keys == 51 and out[1].total_rows == 100
@@ -1591,8 +1595,8 @@ def test_skew_profile_string_keys_survive(spark):
     from odbc2parquet_spark.operators.joins import skew_profile
 
     rows = [("us-east",)] * 10 + [("eu-west",)] * 5 + [("ap-south",)]
-    df = spark.createDataFrame(rows, ["region"])
-    out = {r.hot_rank: r.key for r in skew_profile(df, "region").collect()}
+    df = spark.createDataFrame(rows, ["user_id"])
+    out = {r.hot_rank: r.key for r in skew_profile(df).collect()}
     assert out == {1: "us-east", 2: "eu-west", 3: "ap-south"}
 
 
@@ -1748,28 +1752,28 @@ def test_dq_check_counts_violations_per_rule(spark):
 
     df = spark.createDataFrame(
         [(1, 5.0, "A"), (2, -1.0, "B"), (2, 3.0, None), (4, 99.0, "A")],
-        ["id", "v", "flag"],
+        ["l_orderkey", "v", "flag"],
     )
-    dim = spark.createDataFrame([(1,), (2,)], ["k"])
+    dim = spark.createDataFrame([(1,), (2,)], ["o_orderkey"])
     out = {
         (r.rule, r.column): r
         for r in Q.dq_check(
             df,
             [
-                Q.not_null("flag"),
+                Q.Rule("not_null", "flag"),
                 Q.in_range("v", 0.0, 10.0),
-                Q.matches("flag", "^[AB]$"),
-                Q.unique("id"),
-                Q.ref_integrity("id", dim, "k"),
+                Q.Rule("matches", "flag", pattern="^[AB]$"),
+                Q.unique("l_orderkey"),
+                Q.ref_integrity(dim),
             ],
         ).collect()
     }
     assert out[("not_null", "flag")].n_violations == 1
     assert out[("in_range", "v")].n_violations == 2      # -1.0 and 99.0
     assert out[("matches", "flag")].n_violations == 1    # the NULL flag
-    assert out[("unique", "id")].n_violations == 2       # both id=2 rows
-    assert out[("ref_integrity", "id")].n_violations == 1  # id=4
-    assert not out[("unique", "id")].pass_
+    assert out[("unique", "l_orderkey")].n_violations == 2       # both key-2 rows
+    assert out[("ref_integrity", "l_orderkey")].n_violations == 1  # key 4
+    assert not out[("unique", "l_orderkey")].pass_
     assert all(r.n_rows == 4 for r in out.values())
 
 
@@ -1797,12 +1801,12 @@ def test_merge_agg_states_equals_full_recompute(spark):
 
     df = spark.createDataFrame(
         [("a", 1.5), ("a", 2.5), ("b", -1.0), ("b", 7.0), ("a", 0.0)],
-        ["k", "v"],
+        ["k", "value"],
     )
-    full = {r.k: r for r in partial_agg_state(df, ["k"], "v").collect()}
+    full = {r.k: r for r in partial_agg_state(df, ["k"]).collect()}
     merged = merge_agg_states(
-        partial_agg_state(df.filter("v > 1"), ["k"], "v"),
-        partial_agg_state(df.filter("v <= 1"), ["k"], "v"),
+        partial_agg_state(df.filter("value > 1"), ["k"]),
+        partial_agg_state(df.filter("value <= 1"), ["k"]),
         ["k"],
     )
     got = {r.k: r for r in merged.collect()}
@@ -1858,11 +1862,11 @@ def test_bloom_semi_join_equals_plain_semi_join(spark):
     from odbc2parquet_spark.operators.joins import bloom_semi_join
 
     keys = [i * 7 for i in range(1000)]
-    big = spark.createDataFrame([(i, f"r{i}") for i in range(3000)], ["k", "v"])
-    small = spark.createDataFrame([(k,) for k in keys], ["sk"])
-    got = sorted(r.k for r in bloom_semi_join(big, small, "k", "sk").collect())
-    want = sorted(r.k for r in big.join(
-        small.withColumnsRenamed({"sk": "k"}), "k", "left_semi").collect())
+    big = spark.createDataFrame([(i, f"r{i}") for i in range(3000)], ["o_custkey", "v"])
+    small = spark.createDataFrame([(k,) for k in keys], ["c_custkey"])
+    got = sorted(r.o_custkey for r in bloom_semi_join(big, small).collect())
+    want = sorted(r.o_custkey for r in big.join(
+        small.withColumnsRenamed({"c_custkey": "o_custkey"}), "o_custkey", "left_semi").collect())
     assert got == want and len(got) == 3000 // 7 + 1
 
     # the 4096-bit filter (md5 two-hash, 3 probes) lets some non-members
@@ -2074,16 +2078,18 @@ def test_pps_sample_exact_k_and_proportionality(spark):
     from odbc2parquet_spark.operators.sampling import pps_sample
 
     rows = [(i, 10) for i in range(100)] + [(1000, 1000)]  # heavy item
-    df = spark.createDataFrame(rows, ["doc_id", "w"])
-    out = pps_sample(df, "w", k=40).collect()
-    assert sum(r.n_hits for r in out) == 40
+    df = spark.createDataFrame(rows, ["doc_id", "n_chars"])
+    out = pps_sample(df).collect()
+    assert sum(r.n_hits for r in out) == 500
+    # systematic PPS draws floor or ceil of the expected k * w / W:
+    # 250 for the heavy item, 2.5 for each light one
     heavy = {r.doc_id: r.n_hits for r in out}.get(1000, 0)
-    assert 15 <= heavy <= 25  # expected 20 = k * 1000/2000
-    assert all(r.n_hits >= 1 for r in out)
+    assert 249 <= heavy <= 251
+    assert all(r.n_hits in (2, 3) for r in out if r.doc_id != 1000)
 
-    zero = spark.createDataFrame([(1, 0), (2, 5)], ["doc_id", "w"])
-    z = pps_sample(zero, "w", k=3).collect()
-    assert {r.doc_id for r in z} == {2} and z[0].n_hits == 3
+    zero = spark.createDataFrame([(1, 0), (2, 5)], ["doc_id", "n_chars"])
+    z = pps_sample(zero).collect()
+    assert {r.doc_id for r in z} == {2} and z[0].n_hits == 500
 
 
 def test_pps_sample_partitioning_independent(spark):
@@ -2093,14 +2099,11 @@ def test_pps_sample_partitioning_independent(spark):
     from odbc2parquet_spark.operators.sampling import pps_sample
 
     df = spark.createDataFrame(
-        [(i, 1 + (i * 7) % 23) for i in range(500)], ["doc_id", "w"]
+        [(i, 1 + (i * 7) % 23) for i in range(500)], ["doc_id", "n_chars"]
     )
-    a = {(r.doc_id, r.n_hits) for r in pps_sample(df, "w", 50).collect()}
-    b = {
-        (r.doc_id, r.n_hits)
-        for r in pps_sample(df.repartition(17), "w", 50).collect()
-    }
-    assert a == b and sum(h for _, h in a) == 50
+    a = {(r.doc_id, r.n_hits) for r in pps_sample(df).collect()}
+    b = {(r.doc_id, r.n_hits) for r in pps_sample(df.repartition(17)).collect()}
+    assert a == b and sum(h for _, h in a) == 500
 
 
 def test_ewma_last_n_known_values(spark):
@@ -2109,13 +2112,10 @@ def test_ewma_last_n_known_values(spark):
     from odbc2parquet_spark.operators.rollup import ewma_last_n
 
     df = spark.createDataFrame(
-        [(1, 1, 1.0), (1, 2, 2.0), (1, 3, 4.0), (2, 1, 7.0)],
-        ["uid", "seq", "value"],
+        [(1, 1, 10, 1.0), (1, 2, 11, 2.0), (1, 3, 12, 4.0), (2, 1, 13, 7.0)],
+        ["user_id", "ts", "event_id", "value"],
     )
-    out = {
-        (r.uid, r.seq): r.ewma
-        for r in ewma_last_n(df, "uid", ["seq"], "value").collect()
-    }
+    out = {(r.user_id, r.ts): r.ewma for r in ewma_last_n(df).collect()}
     assert out[(1, 1)] == 1.0
     assert out[(1, 2)] == (2 * 128 + 1 * 64) / 192
     assert out[(1, 3)] == (4 * 128 + 2 * 64 + 1 * 32) / 224
@@ -2169,7 +2169,7 @@ def test_linear_attribution_credit_conservation(spark):
         ],
         ["user_id", "ts", "channel"],
     )
-    rows = linear_attribution(conv, touches, key="user_id").collect()
+    rows = linear_attribution(conv, touches).collect()
     by_conv = {}
     for r in rows:
         by_conv.setdefault(r.conv_id, []).append(r)
@@ -2183,20 +2183,21 @@ def test_linear_attribution_credit_conservation(spark):
 
 
 def test_pq_refine_reduces_distortion(spark):
-    """One Lloyd step on the PQ codebook must not increase total
+    """Lloyd steps on the PQ codebook must not increase total
     quantization distortion (sum of nearest-centroid d2 over all
-    vectors/subspaces) — the k-means monotonicity invariant."""
+    vectors/subspaces) — the k-means monotonicity invariant. 320 vectors
+    over the 256 seed codewords, so the non-seed ones move the means."""
     import random
 
     rng = random.Random(7)
     rows = []
-    for i in range(64):
+    for i in range(320):
         center = [float(rng.choice([0, 10]))] * 64
         rows.append((i, [c + rng.uniform(-1, 1) for c in center]))
     vecs = spark.createDataFrame(rows, ["vec_id", "embedding"]).select(
         "vec_id", F.col("embedding").cast("array<float>").alias("embedding")
     )
-    cb0 = S.pq_codebook(vecs, k=4)
+    cb0 = S.pq_codebook(vecs)
     cb1 = S.pq_refine_codebook(vecs, cb0)
 
     def distortion(cb):
@@ -2208,9 +2209,9 @@ def test_pq_refine_reduces_distortion(spark):
 
     d0, d1 = distortion(cb0), distortion(cb1)
     assert d1 <= d0
-    # refined centroids keep the subspace layout: 8 subspaces, <= 4 cells
+    # refined centroids keep the subspace layout: 32 subspaces, <= 256 cells
     per_sub = {r.subspace: r.n for r in cb1.groupBy("subspace").agg(F.count("*").alias("n")).collect()}
-    assert set(per_sub) == set(range(8)) and all(n <= 4 for n in per_sub.values())
+    assert set(per_sub) == set(range(32)) and all(n <= 256 for n in per_sub.values())
 
 
 def test_winsorize_clamps_to_group_band(spark):
@@ -2220,8 +2221,8 @@ def test_winsorize_clamps_to_group_band(spark):
 
     rows = [("a", float(v)) for v in [0, 10, 20, 30, 40, 50, 60, 70, 80, 1000]]
     rows += [("b", 5.0), ("b", 6.0), ("b", 7.0)]
-    df = spark.createDataFrame(rows, ["g", "value"])
-    out = {(r.g, r.value): r for r in winsorize(df, "value", "g").collect()}
+    df = spark.createDataFrame(rows, ["event_type", "value"])
+    out = {(r.event_type, r.value): r for r in winsorize(df).collect()}
     a_hi = out[("a", 1000.0)]
     assert a_hi.value_w == a_hi.p_hi < 1000.0
     a_lo = out[("a", 0.0)]
@@ -2257,12 +2258,9 @@ def test_ab_assign_deterministic_and_unit_stable(spark):
 
     from odbc2parquet_spark.operators.sampling import ab_assign
 
-    df = spark.createDataFrame([(i,) for i in range(200)], ["uid"])
-    a1 = {r.uid: r.variant for r in ab_assign(df, "uid").collect()}
-    a2 = {
-        r.uid: r.variant
-        for r in ab_assign(df.repartition(7), "uid").collect()
-    }
+    df = spark.createDataFrame([(i,) for i in range(200)], ["user_id"])
+    a1 = {r.user_id: r.variant for r in ab_assign(df).collect()}
+    a2 = {r.user_id: r.variant for r in ab_assign(df.repartition(7)).collect()}
     want = {
         i: "AB"[int(hashlib.md5(f"exp:{i}".encode()).hexdigest()[:15], 16) % 2]
         for i in range(200)
@@ -2276,41 +2274,31 @@ def test_nest_children_roundtrip_nested_parquet(spark, tmp_path):
     intact, and child order is deterministic regardless of partitioning."""
     from odbc2parquet_spark.operators.nesting import nest_children
 
-    rows = [(1, 2, "b"), (1, 1, "a"), (2, 5, "z"), (1, 3, "c")]
-    ch = spark.createDataFrame(rows, ["pk", "seq", "payload"])
-    nested = nest_children(ch, "pk", ["seq", "payload"], "items")
+    rows = [(1, 2, 20, 7), (1, 1, 10, 9), (2, 5, 50, 1), (1, 3, 30, 8)]
+    ch = spark.createDataFrame(rows, ["l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"])
+    nested = nest_children(ch)
     out = str(tmp_path / "nested")
     nested.write.mode("overwrite").parquet(out)
     back = spark.read.parquet(out)
-    assert back.schema["items"].dataType.simpleString() == (
-        "array<struct<seq:bigint,payload:string>>"
+    assert back.schema["lines"].dataType.simpleString() == (
+        "array<struct<l_linenumber:bigint,l_partkey:bigint,l_suppkey:bigint>>"
     )
-    got = {r.pk: [(i.seq, i.payload) for i in r.items] for r in back.collect()}
-    assert got[1] == [(1, "a"), (2, "b"), (3, "c")]
-    reparted = {
-        r.pk: [(i.seq, i.payload) for i in r.items]
-        for r in nest_children(ch.repartition(5), "pk", ["seq", "payload"], "items").collect()
-    }
-    assert reparted == {r.pk: [(i.seq, i.payload) for i in r.items] for r in nested.collect()}
+    got = {r.l_orderkey: [tuple(i) for i in r.lines] for r in back.collect()}
+    assert got[1] == [(1, 10, 9), (2, 20, 7), (3, 30, 8)]
+    reparted = {r.l_orderkey: [tuple(i) for i in r.lines] for r in nest_children(ch.repartition(5)).collect()}
+    assert reparted == {r.l_orderkey: [tuple(i) for i in r.lines] for r in nested.collect()}
 
 
 def test_k_anonymity_audit_finds_small_groups(spark):
-    import pytest as _pytest
-
     from odbc2parquet_spark.operators.quality import k_anonymity_audit
 
-    rows = [("US", "a")] * 5 + [("US", "b")] * 2 + [("DE", "a")]
-    df = spark.createDataFrame(rows, ["country", "seg"])
+    rows = [(7, "a")] * 8 + [(7, "b")] * 7 + [(3, "a")]
+    df = spark.createDataFrame(rows, ["c_nationkey", "c_mktsegment"])
     risky = {
-        (r.country, r.seg): r.n_rows
-        for r in k_anonymity_audit(df, ["country", "seg"], k=3).collect()
+        (r.c_nationkey, r.c_mktsegment): r.n_rows
+        for r in k_anonymity_audit(df).collect()
     }
-    assert risky == {("US", "b"): 2, ("DE", "a"): 1}
-    assert k_anonymity_audit(df, ["country", "seg"], k=2).count() == 1
-    with _pytest.raises(ValueError):
-        k_anonymity_audit(df, [], k=3)
-    with _pytest.raises(ValueError):
-        k_anonymity_audit(df, ["country"], k=1)
+    assert risky == {(7, "b"): 7, (3, "a"): 1}  # 8 rows is not at risk
 
 
 def test_tree_ancestry_chain_and_forest(spark):
@@ -2341,7 +2329,7 @@ def test_sweep_line_concurrency_known_peak(spark):
 
     iv = [(0, 10), (5, 15), (8, 12), (15, 20)]  # (15,20) abuts (5,15)
     df = spark.createDataFrame(iv, ["s", "e"])
-    out = sweep_line_concurrency(df, "s", "e")
+    out = sweep_line_concurrency(df)
     peak = out.agg(F.max("concurrency")).collect()[0][0]
     assert peak == 3
     at15 = {
@@ -2350,7 +2338,7 @@ def test_sweep_line_concurrency_known_peak(spark):
     }
     # end of (5,15) drops to N, then start of (15,20) returns to N+1 = 1->...
     assert (1, 1) in at15  # the start at 15 sees concurrency 1, not 2
-    reparted = sweep_line_concurrency(df.repartition(5), "s", "e")
+    reparted = sweep_line_concurrency(df.repartition(5))
     assert {tuple(r) for r in reparted.collect()} == {tuple(r) for r in out.collect()}
 
 
@@ -2362,7 +2350,7 @@ def test_sweep_line_concurrency_empty_input(spark):
     empty = spark.createDataFrame(
         [], StructType([StructField("s", LongType()), StructField("e", LongType())])
     )
-    out = sweep_line_concurrency(empty, "s", "e")
+    out = sweep_line_concurrency(empty)
     assert out.count() == 0
     assert out.columns == ["t", "delta", "concurrency"]
 
@@ -2374,11 +2362,11 @@ def test_mad_outliers_robust_to_contamination(spark):
 
     rows = [("a", float(v)) for v in [10, 11, 12, 10, 11, 12, 10, 11, 12, 1000]]
     rows += [("b", 5.0), ("b", 5.1), ("b", 4.9)]
-    df = spark.createDataFrame(rows, ["g", "value"])
-    out = mad_outliers(df, "value", "g").collect()
-    flagged = {(r.g, r.value) for r in out if r.value_outlier}
+    df = spark.createDataFrame(rows, ["event_type", "value"])
+    out = mad_outliers(df).collect()
+    flagged = {(r.event_type, r.value) for r in out if r.value_outlier}
     assert flagged == {("a", 1000.0)}
-    a = next(r for r in out if r.g == "a" and r.value == 10.0)
+    a = next(r for r in out if r.event_type == "a" and r.value == 10.0)
     assert a.med == 11.0 and a.mad == 1.0
 
 
@@ -2387,11 +2375,10 @@ def test_rolling_trend_known_slopes(spark):
     a constant series has slope 0; the first row (n_window=1) drops."""
     from odbc2parquet_spark.operators.rollup import rolling_trend
 
-    rows = [(1, i, 3.0 + 2.0 * i) for i in range(12)]  # slope 2
-    rows += [(2, i, 7.0) for i in range(5)]            # slope 0
-    df = spark.createDataFrame(rows, ["uid", "seq", "value"])
-    out = {(r.uid, r.seq): (r.n_window, r.slope) for r in
-           rolling_trend(df, "uid", ["seq"], "value").collect()}
+    rows = [(1, i, i, 3.0 + 2.0 * i) for i in range(12)]  # slope 2
+    rows += [(2, i, 100 + i, 7.0) for i in range(5)]      # slope 0
+    df = spark.createDataFrame(rows, ["user_id", "ts", "event_id", "value"])
+    out = {(r.user_id, r.ts): (r.n_window, r.slope) for r in rolling_trend(df).collect()}
     assert (1, 0) not in out and (2, 0) not in out
     assert out[(1, 3)] == (4, 2.0)
     assert out[(1, 11)] == (8, 2.0)  # full window, still exact
@@ -2402,47 +2389,65 @@ def test_hll_estimate_accuracy_and_merge_invariance(spark):
     from odbc2parquet_spark.operators.sketches import hll_distinct_per_group
 
     df = spark.range(0, 30000).selectExpr(
-        "CAST(id % 3 AS STRING) AS g", "id % 4000 as v"
+        "CAST(id % 3 AS STRING) AS day", "id % 4000 as user_id"
     )  # three groups, each covering <= 4000 distinct values
-    est = {r.g: r for r in hll_distinct_per_group(df, ["g"], "v").collect()}
+    est = {r.day: r for r in hll_distinct_per_group(df).collect()}
     for g in ("0", "1", "2"):
-        exact = df.filter(f"g = '{g}'").select("v").distinct().count()
+        exact = df.filter(f"day = '{g}'").select("user_id").distinct().count()
         rel = abs(est[g].estimate - exact) / exact
         assert rel < 0.20, (g, est[g].estimate, exact)  # ~1.04/sqrt(256) regime
         assert est[g].m == 256
     # small-cardinality regime: linear counting branch engages and is tight
     small = hll_distinct_per_group(
-        spark.range(0, 40).selectExpr("'x' AS g", "id as v"), ["g"], "v"
+        spark.range(0, 40).selectExpr("'x' AS day", "id as user_id")
     ).first()
     assert abs(small.estimate - 40) / 40 < 0.10
     assert small.zero_regs > 0
     # partitioning invariance: registers merge by MAX, so the estimate
     # cannot depend on how rows were split
-    a = hll_distinct_per_group(df.repartition(64), ["g"], "v").collect()
-    b = hll_distinct_per_group(df.coalesce(1), ["g"], "v").collect()
+    a = hll_distinct_per_group(df.repartition(64)).collect()
+    b = hll_distinct_per_group(df.coalesce(1)).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
 @pytest.mark.slow
 def test_reservoir_sample_weight_proportional(spark):
     """A-Res selection probability tracks weight: with weights 10:1 the
-    heavy item family dominates the reservoir; selection is partitioning-
-    independent and excludes non-positive weights."""
+    heavy item family dominates each language's 16-row reservoir, which
+    is exactly the top 16 of round(ln u, 9) / w recomputed here;
+    selection is partitioning-independent and excludes non-positive
+    weights."""
+    import hashlib
+    import math
+    from decimal import ROUND_HALF_UP, Decimal
+
     from odbc2parquet_spark.operators.sampling import reservoir_sample
 
-    rows = [(i, "heavy" if i % 2 == 0 else "light", 10.0 if i % 2 == 0 else 1.0) for i in range(2000)]
-    df = spark.createDataFrame(rows, ["id", "fam", "w"])
-    out = reservoir_sample(df, [], "id", "w", k=200).collect()
-    heavy = sum(1 for r in out if r.fam == "heavy")
-    assert len(out) == 200
-    assert heavy > 150  # E[heavy] ~ 10/11 * 200 = 182
+    rows = [(i, "en" if i % 3 else "de", 10.0 if i % 2 == 0 else 1.0) for i in range(2000)]
+    df = spark.createDataFrame(rows, ["doc_id", "lang", "n_chars"])
+    out = reservoir_sample(df).collect()
+
+    def score(doc_id, w):
+        u = (int(hashlib.md5(str(doc_id).encode()).hexdigest()[:15], 16) + 1) / 2.0**60
+        ln9 = float(Decimal(repr(math.log(u))).quantize(Decimal("1e-9"), ROUND_HALF_UP))
+        return ln9 / w
+
+    want = set()
+    for lang in ("en", "de"):
+        ranked = sorted((-score(i, w), i) for i, lg, w in rows if lg == lang)
+        want |= {(lang, i) for _, i in ranked[:16]}
+    assert {(r.lang, r.doc_id) for r in out} == want
+    heavy = sum(1 for r in out if r.n_chars == 10.0)
+    assert heavy > 24  # E[heavy] ~ 10/11 * 32 = 29
     # determinism under repartitioning
-    ids_a = sorted(r.id for r in reservoir_sample(df.repartition(32), [], "id", "w", 200).collect())
-    ids_b = sorted(r.id for r in reservoir_sample(df.coalesce(1), [], "id", "w", 200).collect())
+    ids_a = sorted(r.doc_id for r in reservoir_sample(df.repartition(32)).collect())
+    ids_b = sorted(r.doc_id for r in reservoir_sample(df.coalesce(1)).collect())
     assert ids_a == ids_b
     # zero/negative weights can never be drawn
-    dfz = spark.createDataFrame([(1, 0.0), (2, -3.0), (3, 5.0)], ["id", "w"])
-    assert [r.id for r in reservoir_sample(dfz, [], "id", "w", 10).collect()] == [3]
+    dfz = spark.createDataFrame(
+        [(1, "en", 0.0), (2, "en", -3.0), (3, "en", 5.0)], ["doc_id", "lang", "n_chars"]
+    )
+    assert [r.doc_id for r in reservoir_sample(dfz).collect()] == [3]
 
 
 def test_novelty_first_seen_semantics(spark):
@@ -2473,9 +2478,9 @@ def test_target_encode_loo_excludes_own_row(spark):
 
     df = spark.createDataFrame(
         [(1, "a", 10.0), (2, "a", 20.0), (3, "a", 30.0), (4, "b", 100.0)],
-        ["id", "cat", "y"],
+        ["id", "o_orderpriority", "o_totalprice"],
     )
-    out = {r.id: r.enc_loo for r in target_encode_loo(df, "cat", "y").collect()}
+    out = {r.id: r.enc_loo for r in target_encode_loo(df).collect()}
     gmean = 160.0 / 4
     # row 1: (20+30 + 20*40) / (3-1+20) = 850/22
     assert abs(out[1] - 850.0 / 22) < 1e-6
@@ -2503,7 +2508,7 @@ def test_prefix_jaccard_matches_all_pairs(spark, sf_dir):
         (r.id_a, r.id_b)
         for r in prefix_jaccard_pairs(sh, threshold=0.5).collect()
     }
-    want = {(r.id_a, r.id_b) for r in jaccard_pairs(sh, threshold=0.5).collect()}
+    want = {(r.id_a, r.id_b) for r in jaccard_pairs(sh).collect()}
     assert got == want and len(want) > 0
 
 
@@ -2529,17 +2534,15 @@ def test_kmv_overlap_estimate_accuracy(spark):
     the small regime (union < k) is exact."""
     from odbc2parquet_spark.operators.sketches import kmv_overlap_estimate
 
-    a = spark.range(0, 5000).selectExpr("id AS v")
-    b = spark.range(2500, 7500).selectExpr("id AS v")
-    r = kmv_overlap_estimate(a, "v", b, "v").first()
+    a = spark.range(0, 5000).selectExpr("id AS c_custkey")
+    b = spark.range(2500, 7500).selectExpr("id AS o_custkey")
+    r = kmv_overlap_estimate(a, b).first()
     assert r.k_used == 256
     assert abs(r.jaccard_est - 1 / 3) < 0.12
     assert abs(r.inter_est - 2500) / 2500 < 0.25
     small = kmv_overlap_estimate(
-        spark.range(0, 50).selectExpr("id AS v"),
-        "v",
-        spark.range(25, 75).selectExpr("id AS v"),
-        "v",
+        spark.range(0, 50).selectExpr("id AS c_custkey"),
+        spark.range(25, 75).selectExpr("id AS o_custkey"),
     ).first()
     assert small.k_used == 75 and small.n_shared == 25
     assert small.inter_est == 25.0  # exact below k
@@ -2556,23 +2559,23 @@ def test_kth_smallest_exact_selection(spark):
 
     rng = random.Random(7)
     vals = [rng.uniform(-1e6, 1e6) for _ in range(4001)] + [42.0] * 500
-    df = spark.createDataFrame([(v,) for v in vals], ["v"]).repartition(16)
+    df = spark.createDataFrame([(v,) for v in vals], ["l_extendedprice"]).repartition(16)
     s = sorted(vals)
     for k in (1, 2, 1000, len(vals) // 2, len(vals) - 1, len(vals)):
-        assert kth_smallest(df, "v", k) == s[k - 1]
-    med = exact_median(df, "v").first()
+        assert kth_smallest(df, k) == s[k - 1]
+    med = exact_median(df).first()
     assert med.n_rows == 4501 and med.median == s[2250]  # odd: middle value
     evals = vals[:4500]
-    edf = spark.createDataFrame([(v,) for v in evals], ["v"]).repartition(8)
+    edf = spark.createDataFrame([(v,) for v in evals], ["l_extendedprice"]).repartition(8)
     es = sorted(evals)
-    emed = exact_median(edf, "v").first()
+    emed = exact_median(edf).first()
     assert emed.median == (es[2249] + es[2250]) / 2.0  # even: IEEE mean
     import pytest as _pt
 
     with _pt.raises(ValueError):
-        kth_smallest(df, "v", 0)
+        kth_smallest(df, 0)
     with _pt.raises(ValueError):
-        kth_smallest(df, "v", len(vals) + 1)
+        kth_smallest(df, len(vals) + 1)
 
 
 def test_purged_time_split_embargo_gap(spark):
@@ -2582,7 +2585,7 @@ def test_purged_time_split_embargo_gap(spark):
 
     rows = [(i * 60_000_000,) for i in range(10_000)]  # one a minute, ~7 days
     df = spark.createDataFrame(rows, ["us"])
-    out = {r.split: r for r in purged_time_split(df, "us").collect()}
+    out = {r.split: r for r in purged_time_split(df).collect()}
     assert set(out) == {"train", "purged", "test"}
     assert out["train"].max_us < out["purged"].min_us <= out["purged"].max_us < out["test"].min_us
     assert out["test"].min_us - out["train"].max_us > 86_400_000_000
@@ -2608,20 +2611,20 @@ def test_hll_register_merge_equals_direct(spark):
     )
 
     df = spark.range(0, 9000).selectExpr(
-        "CAST(id % 3 AS STRING) AS fine", "'all' AS coarse", "id % 2000 AS v"
+        "CAST(id % 3 AS STRING) AS fine", "'all' AS day", "id % 2000 AS user_id"
     )
-    direct = hll_distinct_per_group(df, ["coarse"], "v").first()
-    fine = hll_registers(df, ["coarse", "fine"], "v")
-    merged = fine.groupBy("coarse", "reg").agg(F.max("mrho").alias("mrho"))
-    via_merge = hll_estimate_from_registers(merged, ["coarse"]).first()
+    direct = hll_distinct_per_group(df).first()
+    fine = hll_registers(df, ["day", "fine"])
+    merged = fine.groupBy("day", "reg").agg(F.max("mrho").alias("mrho"))
+    via_merge = hll_estimate_from_registers(merged, ["day"]).first()
     assert via_merge.estimate == direct.estimate
     assert via_merge.zero_regs == direct.zero_regs
 
 
 def test_k_core_matches_reference_peel(spark):
     """Seeded random graphs + a planted clique: distributed peeling equals
-    a pure-Python Batagelj-Zaversnik reference, and the planted 6-clique
-    survives a 5-core that kills the sparse background."""
+    a pure-Python Batagelj-Zaversnik reference, and the planted 7-clique
+    survives the 6-core that kills the sparse background."""
     import random
 
     from odbc2parquet_spark.operators.graph import k_core
@@ -2645,13 +2648,12 @@ def test_k_core_matches_reference_peel(spark):
         tuple(sorted((rng.randrange(60), rng.randrange(60))))
         for _ in range(120)
     }
-    clique = {(a, b) for a in range(100, 106) for b in range(100, 106) if a < b}
+    clique = {(a, b) for a in range(100, 107) for b in range(100, 107) if a < b}
     edges_set = {e for e in background | clique if e[0] != e[1]}
     df = spark.createDataFrame(sorted(edges_set), ["id_a", "id_b"])
-    for k in (2, 3, 5):
-        got = {r.node: r.degree for r in k_core(df, k).collect()}
-        assert got == ref_k_core(edges_set, k), f"k={k}"
-    assert set(ref_k_core(edges_set, 5)) >= set(range(100, 106))
+    got = {r.node: r.degree for r in k_core(df).collect()}
+    assert got == ref_k_core(edges_set, 6)
+    assert set(got) >= set(range(100, 107))
 
 
 def test_kfold_assignment_properties(spark):
@@ -2662,15 +2664,15 @@ def test_kfold_assignment_properties(spark):
     df = spark.range(0, 5000).selectExpr(
         "id AS doc_id", "CAST(id % 4 AS STRING) AS lang"
     )
-    cert = kfold_assign(df, "doc_id", strata_col="lang").collect()
+    cert = kfold_assign(df).collect()
     assert sum(r.n_rows for r in cert) == 5000
     assert {r.fold for r in cert} == set(range(5))
     per_fold = {}
     for r in cert:
         per_fold[r.fold] = per_fold.get(r.fold, 0) + r.n_rows
     assert all(abs(c - 1000) < 150 for c in per_fold.values())  # ~4 sigma
-    a = sorted(map(tuple, kfold_assign(df.repartition(32), "doc_id", "lang").collect()))
-    b = sorted(map(tuple, kfold_assign(df.coalesce(1), "doc_id", "lang").collect()))
+    a = sorted(map(tuple, kfold_assign(df.repartition(32)).collect()))
+    b = sorted(map(tuple, kfold_assign(df.coalesce(1)).collect()))
     assert a == b
 
 
@@ -2688,8 +2690,8 @@ def test_hll_cumulative_carries_untouched_registers(spark):
     )
 
     rows = [(1, v) for v in range(200)] + [(2, v) for v in range(190, 210)]
-    df = spark.createDataFrame(rows, ["day", "v"])
-    regs = hll_registers(df, ["day"], "v")
+    df = spark.createDataFrame(rows, ["day", "user_id"])
+    regs = hll_registers(df, ["day"])
     days = regs.select("day").distinct()
     grid = days.crossJoin(F.broadcast(
         spark.range(256).select(F.col("id").cast("long").alias("reg"))
@@ -2705,9 +2707,7 @@ def test_hll_cumulative_carries_untouched_registers(spark):
     cum = {r.day: r.estimate for r in hll_estimate_from_registers(run, ["day"]).collect()}
     # day-2 cumulative must equal sketching the union directly (210 ids),
     # NOT the 20-id day-2 slice
-    union_direct = hll_distinct_per_group(
-        df.select(F.lit(2).alias("day"), "v"), ["day"], "v"
-    ).first()
+    union_direct = hll_distinct_per_group(df.select(F.lit(2).alias("day"), "user_id")).first()
     assert cum[2] == union_direct.estimate
     assert cum[2] > cum[1] * 0.9 and cum[2] >= cum[1]
 
@@ -2720,15 +2720,15 @@ def test_temperature_sample_rebalances_head(spark):
     from odbc2parquet_spark.operators.sampling import temperature_sample
 
     rows = [(i, "big") for i in range(4000)] + [(10_000 + i, "small") for i in range(1000)]
-    df = spark.createDataFrame(rows, ["id", "src"])
-    out = temperature_sample(df, "src", "id")
-    by = {r.src: r.n for r in out.groupBy("src").agg(F.count("*").alias("n")).collect()}
+    df = spark.createDataFrame(rows, ["doc_id", "lang"])
+    out = temperature_sample(df)
+    by = {r.lang: r.n for r in out.groupBy("lang").agg(F.count("*").alias("n")).collect()}
     assert by["small"] == 1000  # binding source kept whole
     # big keeps rate sqrt(4000)*min(n/sqrt(n))/4000 = sqrt(4000*1000)/4000 = 0.5
     assert abs(by["big"] - 2000) < 150
     # determinism under repartitioning
-    a = sorted(r.id for r in temperature_sample(df.repartition(32), "src", "id").collect())
-    b = sorted(r.id for r in temperature_sample(df.coalesce(1), "src", "id").collect())
+    a = sorted(r.doc_id for r in temperature_sample(df.repartition(32)).collect())
+    b = sorted(r.doc_id for r in temperature_sample(df.coalesce(1)).collect())
     assert a == b
 
 
@@ -2776,24 +2776,22 @@ def test_shapley_attribution_axioms(spark):
     )
     touches = spark.createDataFrame(
         [
-            (1, ts(-1), "a"),
-            (1, ts(-2), "b"),
-            (2, ts(-1), "a"),
-            (3, ts(-30), "d"),  # outside the 7-day window
+            (1, ts(-1), "click"),
+            (1, ts(-2), "error"),
+            (2, ts(-1), "click"),
+            (3, ts(-30), "view"),  # outside the 7-day window
         ],
         ["user_id", "ts", "channel"],
     )
-    rows = shapley_attribution(
-        conv, touches, key="user_id", channels=["a", "b", "c", "d"]
-    ).collect()
+    rows = shapley_attribution(conv, touches).collect()
     got = {r.channel: r.shapley_num for r in rows}
     # efficiency: v(full)=3 (every conv's set fits), v(empty)=1 (conv C),
     # so the credited mass is (3 - 1) * 4! = 48
     assert sum(got.values()) == (3 - 1) * 24
     # dummy channels never touched in-window earn zero
-    assert got["c"] == 0 and got["d"] == 0
-    # conv B is carried by {a} alone: a must out-earn b
-    assert got["a"] > got["b"] > 0
+    assert got["signup"] == 0 and got["view"] == 0
+    # conv B is carried by {click} alone: click must out-earn error
+    assert got["click"] > got["error"] > 0
 
 
 def test_shapley_symmetric_channels_equal(spark):
@@ -2809,18 +2807,18 @@ def test_shapley_symmetric_channels_equal(spark):
     )
     touches = spark.createDataFrame(
         [
-            (1, t0 - dt.timedelta(days=1), "a"),
-            (1, t0 - dt.timedelta(days=2), "b"),
-            (2, t0 - dt.timedelta(days=1), "a"),
-            (2, t0 - dt.timedelta(days=3), "b"),
+            (1, t0 - dt.timedelta(days=1), "click"),
+            (1, t0 - dt.timedelta(days=2), "error"),
+            (2, t0 - dt.timedelta(days=1), "click"),
+            (2, t0 - dt.timedelta(days=3), "error"),
         ],
         ["user_id", "ts", "channel"],
     )
-    rows = shapley_attribution(
-        conv, touches, key="user_id", channels=["a", "b"]
-    ).collect()
+    rows = shapley_attribution(conv, touches).collect()
     got = {r.channel: r.shapley_num for r in rows}
-    assert got["a"] == got["b"] == 2  # (2 convs) * 2! / 2 each, x2!
+    # v(T) = 2 iff T holds both; the 2 conversions split evenly, 1 each, x4!
+    assert got["click"] == got["error"] == 24
+    assert got["signup"] == got["view"] == 0
 
 
 def test_suffix_lcp_spans_known_values(spark):
@@ -2869,7 +2867,7 @@ def test_lsh_candidate_pairs_multi_equals_per_config_union(spark):
     configs = [(8, 1), (4, 2), (2, 4), (1, 8)]
     multi = {
         (r.cfg, r.id_a, r.id_b)
-        for r in lsh_candidate_pairs_multi(sig, configs, max_bucket=10).collect()
+        for r in lsh_candidate_pairs_multi(sig, max_bucket=10).collect()
     }
     # brute force: bucket on each band's min-hash tuple, drop buckets of
     # more than 10 ids, pair what is left

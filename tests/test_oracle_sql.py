@@ -87,13 +87,7 @@ def test_no_oracle_sql_is_pasted_twice():
 # holding the later and the earlier copy. Only a parameter list shared by
 # two different algorithms belongs here: a repeated computation is folded
 # into a helper.
-COPIES_ALLOWED: dict[tuple[str, str], str] = {
-    (
-        "operators/similarity.py:ivf_pq_residual_search",
-        "operators/similarity.py:ivf_pq_search",
-    ): "the IVF-PQ parameter list (vectors, probes, nprobe, k_cells, m, "
-    "k_centroids); the residual search encodes v - c(cell), the plain one v",
-}
+COPIES_ALLOWED: dict[tuple[str, str], str] = {}
 
 
 def _code_lines(path: Path) -> list[tuple[int, str, str]]:

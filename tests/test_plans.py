@@ -8,6 +8,7 @@ drops filter pushdown) would still pass value checks at sf0.01 but die at
 import pytest
 
 from odbc2parquet_spark.queries import QUERIES
+from tools.plan_audit import formatted_explain
 
 #: intentional all-pairs/theta operators — quadratic by design, documented
 #: as verification-only (never the scale path).
@@ -205,17 +206,9 @@ MUST_PUSH = ["q_filter_pushdown", "q_param_binding", "q_exists_correlated"]
 pytestmark = pytest.mark.slow  # excluded from the default profile (pytest.ini)
 
 
-def _formatted(df) -> str:
-    return df._jdf.queryExecution().explainString(
-        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-
-
 @pytest.fixture(scope="module")
 def plans(spark, sf_dir):
-    return {name: _formatted(fn(spark, sf_dir)) for name, fn in QUERIES.items()}
+    return {name: formatted_explain(fn(spark, sf_dir)) for name, fn in QUERIES.items()}
 
 
 def test_no_unintended_quadratic_joins(plans):

@@ -50,7 +50,7 @@ def test_acf_daily_hand_computed(spark):
     )
     out = {
         r.lag: r
-        for r in acf_daily(ev, "ts", "event_type").collect()
+        for r in acf_daily(ev).collect()
     }
     # n=4, T=10: dev=(-6,-2,2,6), den=80, num1=20, num2=-24, num3=-36;
     # lags 4..7 reach past the series and have no term
@@ -74,7 +74,7 @@ def test_theil_sen_lower_median(spark):
     ev = spark.createDataFrame(rows, ["event_id", "ts", "event_type"]).select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"), "event_type"
     )
-    r = theil_sen_daily(ev, "ts", "event_type").collect()[0]
+    r = theil_sen_daily(ev).collect()[0]
     # slopes {1, 1.5, 2}: lower median at rank 2 -> 1.5
     assert r.n_days == 3 and r.n_pairs == 3
     assert r.slope_med == pytest.approx(1.5)
@@ -543,9 +543,9 @@ def test_round10_property_batch(spark):
     ).selectExpr("event_id", "CAST(ts AS TIMESTAMP) AS ts", "event_type")
     from odbc2parquet_spark.operators.drift import acf_daily, theil_sen_daily
 
-    for r in acf_daily(ev, "ts", "event_type").collect():
+    for r in acf_daily(ev).collect():
         assert abs(r.acf6) <= 1.0
-    for r in theil_sen_daily(ev, "ts", "event_type").collect():
+    for r in theil_sen_daily(ev).collect():
         # counts in [1,9]: every pairwise slope lies in [-8, 8]
         assert -8.0 <= r.slope_med <= 8.0
         assert r.n_pairs == r.n_days * (r.n_days - 1) // 2

@@ -15,6 +15,12 @@ from odbc2parquet_spark.operators.text import (
 )
 
 
+def _sky(df):
+    """skyline_2d over (x, y) as its (p_retailprice, p_size)."""
+    parts = df.withColumnsRenamed({"x": "p_retailprice", "y": "p_size"})
+    return skyline_2d(parts).withColumnsRenamed({"p_retailprice": "x", "p_size": "y"})
+
+
 def _brute_skyline(pts):
     """Quadratic NOT EXISTS dominance: minimize x, maximize y."""
     out = []
@@ -33,7 +39,7 @@ class TestSkyline:
         rng = random.Random(7)
         pts = [(rng.randrange(100), rng.randrange(40)) for _ in range(400)]
         df = spark.createDataFrame(pts, "x int, y int")
-        got = sorted((r.x, r.y) for r in skyline_2d(df, "x", "y").collect())
+        got = sorted((r.x, r.y) for r in _sky(df).collect())
         assert got == _brute_skyline(pts)
 
     def test_duplicates_all_kept(self, spark):
@@ -41,32 +47,32 @@ class TestSkyline:
         df = spark.createDataFrame(
             [(1, 10, "a"), (1, 10, "b"), (2, 5, "c")], "x int, y int, tag string"
         )
-        got = sorted(r.tag for r in skyline_2d(df, "x", "y").collect())
+        got = sorted(r.tag for r in _sky(df).collect())
         assert got == ["a", "b"]
 
     def test_same_x_keeps_only_best_y(self, spark):
         df = spark.createDataFrame([(1, 10), (1, 9), (2, 11)], "x int, y int")
-        got = sorted((r.x, r.y) for r in skyline_2d(df, "x", "y").collect())
+        got = sorted((r.x, r.y) for r in _sky(df).collect())
         assert got == [(1, 10), (2, 11)]
 
     def test_nulls_excluded_and_empty_ok(self, spark):
         df = spark.createDataFrame(
             [(None, 5), (3, None), (4, 2)], "x int, y int"
         )
-        got = [(r.x, r.y) for r in skyline_2d(df, "x", "y").collect()]
+        got = [(r.x, r.y) for r in _sky(df).collect()]
         assert got == [(4, 2)]
         empty = df.limit(0)
-        assert skyline_2d(empty, "x", "y").count() == 0
+        assert _sky(empty).count() == 0
 
     def test_monotone_chain_all_on_frontier(self, spark):
         pts = [(i, i) for i in range(50)]  # increasing y with x: all frontier
         df = spark.createDataFrame(pts, "x int, y int")
-        assert skyline_2d(df, "x", "y").count() == 50
+        assert _sky(df).count() == 50
 
     def test_dominated_chain_single_survivor(self, spark):
         pts = [(i, 100 - i) for i in range(50)]  # x grows, y falls: only x=0
         df = spark.createDataFrame(pts, "x int, y int")
-        got = [(r.x, r.y) for r in skyline_2d(df, "x", "y").collect()]
+        got = [(r.x, r.y) for r in _sky(df).collect()]
         assert got == [(0, 100)]
 
 

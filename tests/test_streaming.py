@@ -59,7 +59,7 @@ def test_stream_stream_interval_join(spark, tmp_path):
          (2, t0 + datetime.timedelta(minutes=20), "b2")],
         "buys",
     )
-    joined = stream_stream_interval_join(clicks, buys, "user_id")
+    joined = stream_stream_interval_join(clicks, buys)
     out = str(tmp_path / "out")
     q = (
         joined.writeStream.format("parquet")
@@ -130,7 +130,7 @@ def test_late_event_audit_flags_out_of_order(spark):
 
     t0 = dt.datetime(2026, 1, 1)
     s = lambda sec: t0 + dt.timedelta(seconds=sec)  # noqa: E731
-    # arrival order = event_id; delay 600s
+    # arrival order = the arrival column; delay 600s
     rows = [
         (1, s(0), "a"),       # watermark undefined -> on time
         (2, s(10000), "a"),   # advances max to 10000
@@ -140,7 +140,7 @@ def test_late_event_audit_flags_out_of_order(spark):
         (6, s(19300), "b"),   # 19300 < 19400 -> LATE
         (7, s(19410), "b"),   # on time
     ]
-    df = spark.createDataFrame(rows, ["event_id", "ts", "event_type"])
+    df = spark.createDataFrame(rows, ["arrival", "ts", "event_type"])
     got = {r["event_type"]: r for r in late_event_audit(df).collect()}
     # the watermark replayed in arrival order
     want, seen = {}, None

@@ -20,7 +20,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from tools.plan_audit import recorded_segments, truncate_at_cache  # noqa: E402
+from tools.plan_audit import formatted_explain, recorded_segments, truncate_at_cache  # noqa: E402
 
 
 def main() -> None:
@@ -42,11 +42,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     def fmt(df: DataFrame) -> str:
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
+        plan = formatted_explain(df)
         # cached subtrees are dumped once in their own pre-persist
         # segment; inside any later tree they execute as an
         # InMemoryTableScan, so re-printing the full subtree at every

@@ -39,6 +39,12 @@ def _node_depth(line: str) -> int:
     return len(line) - len(line.lstrip(_ART))
 
 
+def formatted_explain(df) -> str:
+    """The text ``df.explain("formatted")`` prints."""
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    return df._jdf.queryExecution().explainString(mode)
+
+
 def truncate_at_cache(tree: str) -> str:
     """Drop every line nested under an InMemoryTableScan node: cached
     subtrees audit once as their own segment; re-printing them at each
@@ -71,11 +77,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     def explain_stats(df):
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
+        plan = formatted_explain(df)
         tree = truncate_at_cache(plan.split("\n\n", 1)[0])
         count = lambda needle: sum(  # noqa: E731
             1 for l in tree.splitlines() if re.search(needle + r"\b.*\(\d+\)$", l.strip())
