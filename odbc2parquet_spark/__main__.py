@@ -351,11 +351,15 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     # usage errors exit here, before the seconds-long session start
-    remote = getattr(args, "jdbc_url", None) or getattr(args, "dsn", None)
-    if args.cmd == "query" and args.tables_dir and remote:
-        raise SystemExit("--tables-dir may not be combined with --jdbc-url or --dsn.")
-    if args.cmd == "insert" and args.dbapi and remote:
-        raise SystemExit("--dbapi may not be combined with --jdbc-url or --dsn.")
+    # a --tables-dir query and a --dbapi insert read no connection flag
+    local = {"query": "--tables-dir", "insert": "--dbapi"}.get(args.cmd)
+    if local and getattr(args, local[2:].replace("-", "_")):
+        if args.jdbc_url or args.dsn:
+            raise SystemExit(f"{local} may not be combined with --jdbc-url or --dsn.")
+        if args.user is not None or args.password is not None:
+            raise SystemExit(
+                f"--user and --password need --jdbc-url or --dsn; {local} takes no credentials."
+            )
     if getattr(args, "dsn", None) is not None or getattr(args, "prompt", False):
         _resolve_connection(args)
     if args.cmd == "query" and args.params and args.jdbc_url:

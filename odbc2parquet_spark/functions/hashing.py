@@ -1,9 +1,10 @@
 """The package's one hash family: md5 hex digits read as integers.
 
 Every operator hash is md5-derived so that a DuckDB oracle can recompute
-it (``CAST('0x' || substring(md5(x), s, n) AS BIGINT)`` is the same value
-as ``md5_long`` here). Fifteen hex digits give a 60-bit value, so sums
-such as ``h1 + 7 * h2`` stay below 2^63.
+it: each Spark helper here has a DuckDB twin of the same name with a
+``_sql`` suffix (``md5_long_sql`` is the same value as ``md5_long``), and
+the oracles build their hashes only from those. Fifteen hex digits give a
+60-bit value, so sums such as ``h1 + 7 * h2`` stay below 2^63.
 """
 
 from __future__ import annotations
@@ -31,3 +32,13 @@ def md5_pair(col: Column) -> tuple[Column, Column]:
     Mitzenmacher, "Less Hashing, Same Performance", ESA 2006)."""
     hexd = F.md5(col)
     return hex_long(hexd), hex_long(hexd, 16)
+
+
+def hex_long_sql(hexd: str, start: int = 1, digits: int = 15) -> str:
+    """DuckDB twin of :func:`hex_long` over the SQL expression ``hexd``."""
+    return f"CAST('0x' || substring({hexd}, {start}, {digits}) AS BIGINT)"
+
+
+def md5_long_sql(expr: str, digits: int = 15) -> str:
+    """DuckDB twin of :func:`md5_long` over the SQL expression ``expr``."""
+    return hex_long_sql(f"md5({expr})", 1, digits)

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from odbc2parquet_spark.functions.hashing import md5_long, md5_pair
+from odbc2parquet_spark.functions.hashing import HASH_DOMAIN, md5_long, md5_pair
 from odbc2parquet_spark.operators.similarity import (
     band_melt,
     banded_hamming_pairs,
@@ -106,9 +106,6 @@ def jaccard_pairs(shingles: DataFrame) -> DataFrame:
 # --------------------------------------------------------- MinHash+LSH
 
 
-MINHASH_MOD = 1 << 60
-
-
 def minhash_signatures(shingles: DataFrame) -> DataFrame:
     """(id, mh0..mh{k-1}) — one groupBy, k min-aggregates, map-side partials.
 
@@ -120,7 +117,7 @@ def minhash_signatures(shingles: DataFrame) -> DataFrame:
     """
     h1, h2 = md5_pair(F.col("g"))
     aggs = [
-        F.min((h1 + F.lit(j) * h2) % F.lit(MINHASH_MOD)).alias(f"mh{j}")
+        F.min((h1 + F.lit(j) * h2) % F.lit(HASH_DOMAIN)).alias(f"mh{j}")
         for j in range(8)
     ]
     return shingles.groupBy("id").agg(*aggs)

@@ -68,6 +68,19 @@ def norm_sq(a: F.Column) -> F.Column:
     return _fold_sum(F.transform(a, lambda x: x.cast("double") * x.cast("double")))
 
 
+def dot_sql(a: str, b: str) -> str:
+    """DuckDB twin of :func:`dot` over the SQL list expressions ``a``, ``b``."""
+    return (
+        f"list_sum(list_transform(list_zip({a}, {b}), "
+        "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
+    )
+
+
+def norm_sq_sql(a: str) -> str:
+    """DuckDB twin of :func:`norm_sq` over the SQL list expression ``a``."""
+    return f"list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+
+
 def cosine(a: F.Column, b: F.Column) -> F.Column:
     return dot(a, b) / F.sqrt(norm_sq(a) * norm_sq(b))
 

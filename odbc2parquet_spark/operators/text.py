@@ -30,7 +30,13 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 
 
 def words(text: Column) -> Column:
+    """The non-empty pieces of ``text`` split on single spaces."""
     return F.filter(F.split(text, " "), lambda w: w != "")
+
+
+def words_sql(text: str) -> str:
+    """DuckDB twin of :func:`words` over the SQL expression ``text``."""
+    return f"list_filter(string_split({text}, ' '), x -> x != '')"
 
 
 def token_stats(docs: DataFrame) -> DataFrame:
@@ -57,6 +63,10 @@ def dedup_normal_form() -> Column:
     ASCII, which is what the gate certifies.
     """
     return F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", " "))
+
+
+#: DuckDB twin of :func:`dedup_normal_form`
+DEDUP_NORMAL_FORM_SQL = "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))"
 
 
 def normalize_stats(docs: DataFrame) -> DataFrame:
@@ -499,6 +509,23 @@ def cap_per_source(docs: DataFrame) -> DataFrame:
     )
 
 
+def _word_counts(docs: DataFrame) -> DataFrame:
+    """(word, wc): each distinct whitespace word of ``docs`` and its count."""
+    return (
+        docs.select(F.explode(words(F.col("text"))).alias("word"))
+        .groupBy("word")
+        .agg(F.count("*").alias("wc"))
+    )
+
+
+def _char_symbols(word_counts: DataFrame) -> DataFrame:
+    """(wc, s): each word of ``word_counts`` split into its characters,
+    the symbols every BPE learner starts from."""
+    return word_counts.select(
+        "wc", F.filter(F.split(F.col("word"), ""), lambda x: x != "").alias("s")
+    )
+
+
 def bpe_pair_counts(docs: DataFrame) -> DataFrame:
     """Adjacent-symbol pair frequencies — the statistic BPE tokenizer
     learning maximizes each merge round (Sennrich et al. '16).
@@ -510,12 +537,7 @@ def bpe_pair_counts(docs: DataFrame) -> DataFrame:
     pairs explode per word (bounded by word length) and sum weighted by
     word frequency.
     """
-    words_df = docs.select(
-        F.explode(words(F.col("text"))).alias("word")
-    ).groupBy("word").agg(F.count("*").alias("wc"))
-    sym = words_df.withColumn(
-        "s", F.filter(F.split(F.col("word"), ""), lambda x: x != "")
-    )
+    sym = _char_symbols(_word_counts(docs))
     pair = F.expr(
         "CASE WHEN size(s) < 2 THEN array() ELSE "
         "transform(sequence(1, size(s) - 1), i -> struct(s[i - 1] AS a, s[i] AS b)) END"
@@ -554,12 +576,7 @@ def bpe_learn(docs: DataFrame, n_merges: int = 5) -> list[tuple[str, str]]:
     symbol table stays distributed and vocabulary-sized. The per-round
     argmax uses a TakeOrdered limit(1), not a global window.
     """
-    words_df = docs.select(
-        F.explode(words(F.col("text"))).alias("word")
-    ).groupBy("word").agg(F.count("*").alias("wc"))
-    sym = words_df.withColumn(
-        "s", F.filter(F.split(F.col("word"), ""), lambda x: x != "")
-    ).select("wc", "s")
+    sym = _char_symbols(_word_counts(docs))
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
         pair = F.expr(
@@ -793,9 +810,7 @@ def bpe_learn_batched(
     """
     import pandas as pd
 
-    words_df = docs.select(
-        F.explode(words(F.col("text"))).alias("word")
-    ).groupBy("word").agg(F.count("*").alias("wc"))
+    words_df = _word_counts(docs)
 
     # Cutover decision on the word table itself (1:1 with the symbol
     # table), so the local path never builds, checkpoints or ships the
@@ -809,13 +824,7 @@ def bpe_learn_batched(
             [(r.wc, list(r.word)) for r in rows], n_merges, batch
         )
 
-    sym = (
-        words_df.withColumn(
-            "s", F.filter(F.split(F.col("word"), ""), lambda x: x != "")
-        )
-        .select("wc", "s")
-        .localCheckpoint()
-    )
+    sym = _char_symbols(words_df).localCheckpoint()
 
     pair = F.expr(
         "CASE WHEN size(s) < 2 THEN array() ELSE "
@@ -1506,7 +1515,7 @@ def bleu2_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """
     ws = docs.select(
         F.col("doc_id").alias("id"),
-        F.filter(F.split(F.col("text"), " "), lambda x: x != "").alias("ws"),
+        words(F.col("text")).alias("ws"),
     )
     uni = ws.select(
         "id", F.lit(1).alias("n"), F.explode("ws").alias("g")

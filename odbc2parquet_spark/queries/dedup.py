@@ -12,8 +12,10 @@ from pyspark.sql import functions as F
 
 from odbc2parquet_spark import cachereg
 from odbc2parquet_spark.catalog import load_table, spread_scan
-from odbc2parquet_spark.functions.hashing import md5_long
+from odbc2parquet_spark.functions.hashing import HASH_DOMAIN, hex_long_sql, md5_long, md5_long_sql
 from odbc2parquet_spark.operators import dedup as D
+from odbc2parquet_spark.operators.similarity import dot_sql, norm_sq_sql
+from odbc2parquet_spark.operators.text import DEDUP_NORMAL_FORM_SQL, dedup_normal_form, words, words_sql
 from odbc2parquet_spark.queries import query
 
 # shared oracle CTE: distinct 3-word shingles per document
@@ -28,9 +30,8 @@ sh AS (
 def _minhash_min(j: int) -> str:
     """Two-hash family h_j = (h1 + j*h2) mod 2^60 from one md5 per shingle
     (mirrors operators/dedup.minhash_signatures)."""
-    h1 = "CAST('0x' || substring(md5(g), 1, 15) AS BIGINT)"
-    h2 = "CAST('0x' || substring(md5(g), 16, 15) AS BIGINT)"
-    return f"MIN(({h1} + {j} * {h2}) % {1 << 60}) AS mh{j}"
+    h1, h2 = md5_long_sql("g"), hex_long_sql("md5(g)", 16)
+    return f"MIN(({h1} + {j} * {h2}) % {HASH_DOMAIN}) AS mh{j}"
 
 
 # shared oracle CTEs over _SHINGLES_CTE's ``sh``: the 8-hash signature,
@@ -72,10 +73,10 @@ _CAND_CTE = _SHINGLES_CTE.format(where="") + "," + _MINHASH_SIG_CTE + "," + _MIN
 # BLEU/ROUGE pair oracles start from
 _CAND_WORDS_CTE = (
     _CAND_CTE
-    + """,
+    + f""",
     w2 AS (
         SELECT doc_id AS id,
-               list_filter(string_split(text, ' '), x -> x != '') AS ws
+               {words_sql("text")} AS ws
         FROM documents
     )"""
 )
@@ -259,7 +260,7 @@ def _simhash_cte(bits: int = 32, weighted: bool = False) -> str:
         WHERE w != ''
     ),
     hashed AS (
-        SELECT id, CAST('0x' || substring(md5(w), 1, {hexchars}) AS BIGINT) AS h FROM words
+        SELECT id, {md5_long_sql("w", hexchars)} AS h FROM words
     ),
     sums AS (SELECT id, """
         + _simhash_bit_sums_sql(bits)
@@ -396,23 +397,20 @@ def dd_simhash_banded_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dd_embedding_cosine",
     bench=False,
-    oracle="""
+    oracle=f"""
     WITH n AS (
         SELECT vec_id,
-               list_sum(list_transform(embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nsq,
+               {norm_sq_sql("embedding")} AS nsq,
                embedding
         FROM embeddings
     )
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
            ROUND(
-               list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+               {dot_sql("a.embedding", "b.embedding")}
                / SQRT(a.nsq * b.nsq), 4) AS cosine4
     FROM n a JOIN n b ON a.vec_id < b.vec_id
     WHERE ROUND(
-               list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+               {dot_sql("a.embedding", "b.embedding")}
                / SQRT(a.nsq * b.nsq), 4) >= 0.4
     """,
 )
@@ -438,19 +436,17 @@ def dd_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Shared by dd_dup_clusters (min-label propagation) and
 # dd_dup_clusters_star (large-star/small-star): both must reproduce the
 # recursive-CTE fixpoint exactly.
-_CLUSTERS_ORACLE = """
+_CLUSTERS_ORACLE = f"""
     WITH RECURSIVE n AS (
         SELECT vec_id,
-               list_sum(list_transform(embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nsq,
+               {norm_sq_sql("embedding")} AS nsq,
                embedding
         FROM embeddings
     ),
     pairs AS (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b
         FROM n a JOIN n b ON a.vec_id < b.vec_id
-        WHERE ROUND(list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                     x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+        WHERE ROUND({dot_sql("a.embedding", "b.embedding")}
                     / SQRT(a.nsq * b.nsq), 4) >= 0.4
     ),
     sym AS (SELECT id_a AS src, id_b AS dst FROM pairs
@@ -706,14 +702,14 @@ def dd_keep_best_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dd_bloom_gate",
-    oracle="""
+    oracle=f"""
     WITH hashes AS (
         SELECT doc_id, md5(text) AS h FROM documents
     ),
     pos AS (
         SELECT doc_id,
-               (CAST('0x' || substring(h, 1, 15) AS BIGINT)
-                + j * CAST('0x' || substring(h, 16, 15) AS BIGINT)) % 4096 AS p
+               ({hex_long_sql("h")}
+                + j * {hex_long_sql("h", 16)}) % 4096 AS p
         FROM hashes, UNNEST(generate_series(0, 2)) AS t(j)
     ),
     bloom AS (
@@ -961,7 +957,7 @@ def dd_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     + _shared_shingles_cte()
     + ","
     + _jaccard_pairs_cte("dup_pairs", "common")
-    + """,
+    + f""",
     sym AS (SELECT id_a AS src, id_b AS dst FROM dup_pairs
             UNION SELECT id_b, id_a FROM dup_pairs),
     cc(id, label) AS (
@@ -971,8 +967,7 @@ def dd_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     clusters AS (SELECT id, MIN(label) AS cluster_id FROM cc GROUP BY id)
     SELECT c.id AS doc_id, c.cluster_id,
-           CASE WHEN CAST('0x' || substring(md5(CAST(c.cluster_id AS VARCHAR)),
-                                            1, 15) AS BIGINT) % 10 < 9
+           CASE WHEN {md5_long_sql("CAST(c.cluster_id AS VARCHAR)")} % 10 < 9
                 THEN 'train' ELSE 'val' END AS split
     FROM clusters c
     """,
@@ -1003,10 +998,10 @@ def dd_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dd_boundary_overlap",
     bench=False,
-    oracle="""
+    oracle=f"""
     WITH t AS (
         SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x != '') AS w
+               {words_sql("text")} AS w
         FROM documents
     ),
     hb AS (
@@ -1031,7 +1026,7 @@ def dd_boundary_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     openings) would surface as hot join keys and are exactly what the
     operator is meant to expose."""
     docs = load_table(spark, sf_dir, "documents")
-    w = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    w = words(F.col("text"))
     hb = docs.select(
         "doc_id",
         F.concat_ws(" ", F.slice(w, 1, 3)).alias("head3"),
@@ -1093,10 +1088,10 @@ def _prefix_jaccard_sql(num: int) -> str:
     "dd_prefix_jaccard",
     oracle="WITH "
     + _SHINGLES_CTE.format(where="")
-    + """,
+    + f""",
     shh AS (
         SELECT DISTINCT id,
-               CAST('0x' || substring(md5(g), 1, 15) AS BIGINT) AS gh
+               {md5_long_sql("g")} AS gh
         FROM sh
     ),"""
     + _prefix_jaccard_sql(3),
@@ -1120,10 +1115,10 @@ def dd_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dd_soft_dedup",
-    oracle="""
+    oracle=f"""
     WITH nf AS (
         SELECT doc_id,
-               md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')))
+               md5({DEDUP_NORMAL_FORM_SQL})
                    AS norm_hash
         FROM documents
     ),
@@ -1145,8 +1140,6 @@ def dd_soft_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries signal. One hash-keyed groupBy + one hash-keyed join back;
     rides the dd_exact shuffle shape at 100 TB. Weight is a single IEEE
     division of exact integers, rounded to 6."""
-    from odbc2parquet_spark.operators.text import dedup_normal_form
-
     docs = load_table(spark, sf_dir, "documents")
     nf = docs.select(
         "doc_id", F.md5(dedup_normal_form()).alias("norm_hash")
@@ -1166,9 +1159,9 @@ def dd_soft_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dd_cdc_chunks",
-    oracle="""
+    oracle=f"""
     WITH w AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '') AS ws
+        SELECT doc_id, {words_sql("text")} AS ws
         FROM documents
     ),
     tok AS (
@@ -1177,7 +1170,7 @@ def dd_soft_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     b AS (
         SELECT doc_id, pos, w,
-               CASE WHEN CAST('0x' || substring(md5(w), 1, 15) AS BIGINT)
+               CASE WHEN {md5_long_sql("w")}
                          % 16 = 0
                     THEN 1 ELSE 0 END AS bd
         FROM tok
@@ -1661,7 +1654,7 @@ def dd_rouge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = D.lsh_candidate_pairs(sig)
     ws = docs.select(
         F.col("doc_id").alias("id"),
-        F.filter(F.split(F.col("text"), " "), lambda x: x != "").alias("ws"),
+        words(F.col("text")).alias("ws"),
     )
     cnts = ws.select("id", F.explode("ws").alias("g")).groupBy("id", "g").agg(
         F.count(F.lit(1)).alias("c")
@@ -1704,12 +1697,12 @@ def dd_rouge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dd_template_groups",
-    oracle="""
+    oracle=f"""
     WITH t AS (
         SELECT doc_id,
                md5(array_to_string(
                    list_transform(
-                       list_filter(string_split(text, ' '), x -> x != ''),
+                       {words_sql("text")},
                        w -> CAST(length(w) AS VARCHAR)),
                    ',')) AS template_hash
         FROM documents
@@ -1735,7 +1728,7 @@ def dd_template_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     skel = F.md5(
         F.array_join(
             F.transform(
-                F.filter(F.split(F.col("text"), " "), lambda x: x != ""),
+                words(F.col("text")),
                 lambda w: F.length(w).cast("string"),
             ),
             ",",
@@ -1754,7 +1747,7 @@ def dd_template_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dd_winnowing_pairs",
-    oracle="""
+    oracle=f"""
     WITH ws AS (
         SELECT doc_id AS id, string_split(text, ' ') AS ws FROM documents
     ),
@@ -1766,7 +1759,7 @@ def dd_template_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     packed AS (
         SELECT id, pos, pos // 1024 AS block,
-               CAST('0x' || substring(md5(g), 1, 12) AS BIGINT) * 1024
+               {md5_long_sql("g", 12)} * 1024
                + (1023 - pos % 1024) AS pk
         FROM grams
     ),
@@ -1863,12 +1856,12 @@ def dd_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dd_suffix_lcp",
-    oracle="""
+    oracle=f"""
     WITH w AS (
         SELECT doc_id,
                list_transform(
-                   list_filter(string_split(text, ' '), x -> x != ''),
-                   w -> CAST('0x' || substring(md5(w), 1, 15) AS BIGINT)
+                   {words_sql("text")},
+                   w -> {md5_long_sql("w")}
                ) AS ws
         FROM documents
     ),

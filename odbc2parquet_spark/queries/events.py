@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from odbc2parquet_spark.catalog import load_table
-from odbc2parquet_spark.functions.hashing import md5_long
+from odbc2parquet_spark.functions.hashing import HASH_DOMAIN, md5_long, md5_long_sql
 from odbc2parquet_spark.operators.asof import asof_join
 from odbc2parquet_spark.operators.sketches import hll_estimate_from_registers, hll_registers
 from odbc2parquet_spark.queries import query
@@ -548,7 +548,7 @@ def ev_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ev_ab_test",
-    oracle="""
+    oracle=f"""
     WITH u AS (
         SELECT user_id,
                CAST(SUM(CASE WHEN event_type = 'purchase'
@@ -559,8 +559,7 @@ def ev_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     a AS (
         SELECT spend,
-               CASE WHEN CAST('0x' || substring(md5('exp:' ||
-                         CAST(user_id AS VARCHAR)), 1, 15) AS BIGINT) % 2 = 0
+               CASE WHEN {md5_long_sql("'exp:' || CAST(user_id AS VARCHAR)")} % 2 = 0
                     THEN 'A' ELSE 'B' END AS variant
         FROM u
     ),
@@ -1077,8 +1076,7 @@ def _epoch_day() -> F.Column:
     oracle=f"""
     WITH h AS (
         SELECT DISTINCT {_DAY} AS day,
-               CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15)
-                    AS BIGINT) AS h
+               {md5_long_sql("CAST(user_id AS VARCHAR)")} AS h
         FROM events
     ),
     r AS (
@@ -1087,7 +1085,7 @@ def _epoch_day() -> F.Column:
     )
     SELECT day, COUNT(*) AS k_used, MAX(h) AS kth_hash,
            CASE WHEN COUNT(*) < 64 THEN CAST(COUNT(*) AS DOUBLE)
-                ELSE 63.0 * {float(1 << 60)} / MAX(h) END AS estimate
+                ELSE 63.0 * {float(HASH_DOMAIN)} / MAX(h) END AS estimate
     FROM r WHERE rn <= 64
     GROUP BY day
     """,
@@ -1106,11 +1104,12 @@ def ev_kmv_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ev_late_audit",
-    oracle="""
+    oracle=f"""
     WITH arr AS (
         SELECT event_type, event_id, epoch_us(ts) AS us,
-               epoch_us(ts) + (CAST('0x' || substring(md5(CAST(event_id AS VARCHAR)), 1, 8)
-                                    AS BIGINT) % 1200) * 1000000 AS arrival_us
+               epoch_us(ts)
+               + ({md5_long_sql("CAST(event_id AS VARCHAR)", 8)} % 1200) * 1000000
+                   AS arrival_us
         FROM events
     ),
     seq AS (
@@ -1536,8 +1535,7 @@ def _hll_regs_cte(unit: str, bucket: str) -> str:
     return f"""
     h AS (
         SELECT {bucket} AS {unit},
-               CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15)
-                    AS BIGINT) AS h
+               {md5_long_sql("CAST(user_id AS VARCHAR)")} AS h
         FROM events
     ),
     regs AS (
@@ -1896,11 +1894,10 @@ def ev_decay_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ev_kmv_quantile",
-    oracle="""
+    oracle=f"""
     WITH h AS (
         SELECT event_type, event_id, value,
-               CAST('0x' || substring(md5(CAST(event_id AS VARCHAR)), 1, 15)
-                    AS BIGINT) AS hk
+               {md5_long_sql("CAST(event_id AS VARCHAR)")} AS hk
         FROM events
     ),
     samp AS (

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from odbc2parquet_spark.catalog import load_table
-from odbc2parquet_spark.functions.hashing import md5_long
+from odbc2parquet_spark.functions.hashing import md5_long, md5_long_sql
 from odbc2parquet_spark.operators.drift import (
     chi_square_independence,
     correlation_matrix,
@@ -863,10 +863,9 @@ def sim_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ev_sprt",
-    oracle="""
+    oracle=f"""
     WITH assigned AS (
-        SELECT CASE WHEN CAST('0x' || substring(md5('exp:' ||
-                    CAST(user_id AS VARCHAR)), 1, 15) AS BIGINT) % 2 = 0
+        SELECT CASE WHEN {md5_long_sql("'exp:' || CAST(user_id AS VARCHAR)")} % 2 = 0
                     THEN 'A' ELSE 'B' END AS variant,
                CAST(ts AS DATE) AS day, event_type
         FROM events WHERE event_type IN ('view', 'purchase')

@@ -21,7 +21,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from odbc2parquet_spark.catalog import load_table
-from odbc2parquet_spark.functions.hashing import md5_long
+from odbc2parquet_spark.functions.hashing import HASH_DOMAIN, md5_long, md5_long_sql
 from odbc2parquet_spark.queries import query
 
 
@@ -685,14 +685,13 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_kmv_distinct",
     oracle=f"""
     WITH h AS (
-        SELECT DISTINCT CAST('0x' || substring(md5(CAST(o_custkey AS VARCHAR)), 1, 15)
-                             AS BIGINT) AS h
+        SELECT DISTINCT {md5_long_sql("CAST(o_custkey AS VARCHAR)")} AS h
         FROM orders
     ),
     small AS (SELECT h FROM h ORDER BY h LIMIT 256)
     SELECT COUNT(*) AS k_used, MAX(h) AS kth_hash,
            CASE WHEN COUNT(*) < 256 THEN CAST(COUNT(*) AS DOUBLE)
-                ELSE 255.0 * {float(1 << 60)} / MAX(h) END AS estimate
+                ELSE 255.0 * {float(HASH_DOMAIN)} / MAX(h) END AS estimate
     FROM small
     """,
 )
@@ -1559,15 +1558,13 @@ def q_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_kmv_overlap",
-    oracle="""
+    oracle=f"""
     WITH ha AS (
-        SELECT DISTINCT CAST('0x' || substring(md5(CAST(c_custkey AS VARCHAR)), 1, 15)
-                              AS BIGINT) AS h
+        SELECT DISTINCT {md5_long_sql("CAST(c_custkey AS VARCHAR)")} AS h
         FROM customer ORDER BY h LIMIT 256
     ),
     hb AS (
-        SELECT DISTINCT CAST('0x' || substring(md5(CAST(o_custkey AS VARCHAR)), 1, 15)
-                              AS BIGINT) AS h
+        SELECT DISTINCT {md5_long_sql("CAST(o_custkey AS VARCHAR)")} AS h
         FROM orders ORDER BY h LIMIT 256
     ),
     u AS (
@@ -1587,7 +1584,7 @@ def q_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (
         SELECT k_used, n_shared,
                CASE WHEN k_used < 256 THEN CAST(k_used AS DOUBLE)
-                    ELSE 255.0 * 1152921504606846976.0 / hk END AS ue
+                    ELSE 255.0 * {HASH_DOMAIN}.0 / hk END AS ue
         FROM s
     )
     """,
@@ -1768,7 +1765,7 @@ def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_join_card_est",
-    oracle="""
+    oracle=f"""
     WITH a AS (
         SELECT user_id, COUNT(*) AS fa FROM events
         WHERE event_type = 'click' GROUP BY user_id
@@ -1779,8 +1776,7 @@ def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     u AS (
         SELECT user_id,
-               CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 15)
-                    AS BIGINT) AS hk
+               {md5_long_sql("CAST(user_id AS VARCHAR)")} AS hk
         FROM (SELECT user_id FROM a UNION SELECT user_id FROM b)
     ),
     samp AS (
@@ -1803,9 +1799,9 @@ def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT ex.exact_card,
            CAST(t.k AS BIGINT) AS k,
-           ROUND(s.s * ((t.k - 1) * 1152921504606846976.0)
+           ROUND(s.s * ((t.k - 1) * {HASH_DOMAIN}.0)
                  / (CAST(t.tau AS DOUBLE) * t.k), 2) AS est_card,
-           ROUND(ABS(s.s * ((t.k - 1) * 1152921504606846976.0)
+           ROUND(ABS(s.s * ((t.k - 1) * {HASH_DOMAIN}.0)
                      / (CAST(t.tau AS DOUBLE) * t.k) - ex.exact_card)
                  / ex.exact_card, 6) AS rel_err
     FROM ex CROSS JOIN tau t CROSS JOIN ssum s
@@ -1866,7 +1862,7 @@ def q_join_card_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     est = (
         F.col("s")
-        * ((F.col("k") - 1) * F.lit(1152921504606846976.0))
+        * ((F.col("k") - 1) * F.lit(float(HASH_DOMAIN)))
         / (F.col("tau").cast("double") * F.col("k"))
     )
     return (
@@ -1885,19 +1881,17 @@ def q_join_card_est(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dp_histogram",
-    oracle="""
+    oracle=f"""
     WITH c AS (
         SELECT o_orderpriority,
                CAST(COUNT(*) AS BIGINT) AS n_true
         FROM orders GROUP BY 1
     )
     SELECT o_orderpriority, n_true,
-           CAST(bit_count(CAST('0x' || substring(
-                md5('dp-hist-1|' || o_orderpriority), 1, 15) AS BIGINT))
+           CAST(bit_count({md5_long_sql("'dp-hist-1|' || o_orderpriority")})
                 - 30 AS BIGINT) AS noise,
            n_true
-           + CAST(bit_count(CAST('0x' || substring(
-                md5('dp-hist-1|' || o_orderpriority), 1, 15) AS BIGINT))
+           + CAST(bit_count({md5_long_sql("'dp-hist-1|' || o_orderpriority")})
                 - 30 AS BIGINT) AS n_noisy
     FROM c
     """,

@@ -13,8 +13,10 @@ from pyspark.sql import functions as F
 
 from odbc2parquet_spark import cachereg
 from odbc2parquet_spark.catalog import footer_row_count, load_table, table_path
-from odbc2parquet_spark.functions.hashing import md5_long
+from odbc2parquet_spark.functions.hashing import md5_long, md5_long_sql
 from odbc2parquet_spark.operators import similarity as S
+from odbc2parquet_spark.operators.similarity import dot_sql, norm_sq_sql
+from odbc2parquet_spark.operators.text import words_sql
 from odbc2parquet_spark.queries import query
 
 
@@ -78,19 +80,12 @@ def _lsh_graph_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DOT = (
-    "list_sum(list_transform(list_zip(a.embedding, b.embedding), "
-    "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-)
-
-
 def _norms_cte(name: str, where: str = "") -> str:
     """``name``: every embedding ``where`` keeps, with its squared norm ``nsq``."""
     return f"""
     {name} AS (
         SELECT vec_id, embedding,
-               list_sum(list_transform(embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nsq
+               {norm_sq_sql("embedding")} AS nsq
         FROM embeddings{where}
     )"""
 
@@ -102,7 +97,7 @@ def _norms_cte(name: str, where: str = "") -> str:
     + f""",
     scored AS (
         SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-               ROUND({_DOT} / SQRT(a.nsq * b.nsq), 4) AS cos4
+               ROUND({dot_sql("a.embedding", "b.embedding")} / SQRT(a.nsq * b.nsq), 4) AS cos4
         FROM n a JOIN n b ON a.vec_id < 10 AND a.vec_id != b.vec_id
     ),
     ranked AS (
@@ -129,15 +124,10 @@ def _planes_sql(n_planes: int = None) -> list[str]:
 
 def _sig_sql(n_planes: int = None) -> str:
     """Signature expression: sum of (dot(embedding, H_j) > 0) << j."""
-    planes = _planes_sql(n_planes)
-    bits = []
-    for j, lits in enumerate(planes):
-        dot = (
-            f"list_sum(list_transform(list_zip(embedding, {lits}), "
-            f"x -> CAST(x[1] AS DOUBLE) * x[2]))"
-        )
-        bits.append(f"(CASE WHEN {dot} > 0 THEN {1 << j} ELSE 0 END)")
-    return " + ".join(bits)
+    return " + ".join(
+        f"(CASE WHEN {dot_sql('embedding', lits)} > 0 THEN {1 << j} ELSE 0 END)"
+        for j, lits in enumerate(_planes_sql(n_planes))
+    )
 
 
 # shared oracle CTEs: 16-plane LSH signatures and their 8-bit buckets
@@ -193,8 +183,7 @@ def _centroids_cte(where: str) -> str:
     ),
     nc AS (
         SELECT centroid_id, centroid,
-               list_sum(list_transform(centroid,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS csq
+               {norm_sq_sql("centroid")} AS csq
         FROM cent
     )"""
 
@@ -205,9 +194,7 @@ def _cos4_cte(name: str, vectors: str) -> str:
     return f"""
     {name} AS (
         SELECT v.vec_id, c.centroid_id,
-               ROUND(list_sum(list_transform(
-                        list_zip(v.embedding, c.centroid),
-                        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+               ROUND({dot_sql("v.embedding", "c.centroid")}
                      / SQRT(v.nsq * c.csq), 4) AS cos4
         FROM {vectors} v CROSS JOIN nc c
     )"""
@@ -292,9 +279,7 @@ def _qprobe_cte(nprobe: int = S.NPROBE) -> str:
             SELECT v.vec_id, c.centroid_id,
                    ROW_NUMBER() OVER (
                        PARTITION BY v.vec_id
-                       ORDER BY ROUND(list_sum(list_transform(
-                                    list_zip(v.embedding, c.centroid),
-                                    x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+                       ORDER BY ROUND({dot_sql("v.embedding", "c.centroid")}
                                 / SQRT(v.nsq * c.csq), 4) DESC, c.centroid_id) AS rnk
             FROM nv v CROSS JOIN nc c
             WHERE v.vec_id < 10
@@ -308,7 +293,7 @@ def _qprobe_cte(nprobe: int = S.NPROBE) -> str:
     + _CENT_CTE
     + ","
     + _qprobe_cte()
-    + """,
+    + f""",
     cand AS (
         SELECT q.query_id, a.vec_id AS neighbor_id
         FROM assign a JOIN qprobe q ON a.centroid_id = q.centroid_id
@@ -316,8 +301,7 @@ def _qprobe_cte(nprobe: int = S.NPROBE) -> str:
     ),
     scored AS (
         SELECT c.query_id, c.neighbor_id,
-               ROUND(list_sum(list_transform(list_zip(q.embedding, n.embedding),
-                        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+               ROUND({dot_sql("q.embedding", "n.embedding")}
                      / SQRT(q.nsq * n.nsq), 4) AS cos4
         FROM cand c
         JOIN nv q ON q.vec_id = c.query_id
@@ -503,24 +487,21 @@ def sim_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_hybrid_search",
-    oracle="""
+    oracle=f"""
     WITH probe AS (
         SELECT embedding AS p,
-               list_sum(list_transform(embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS psq
+               {norm_sq_sql("embedding")} AS psq
         FROM embeddings WHERE vec_id = 0
     ),
     hits AS (
         SELECT d.doc_id, e.embedding,
-               list_sum(list_transform(e.embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS esq
+               {norm_sq_sql("e.embedding")} AS esq
         FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id
         WHERE list_contains(string_split(d.text, ' '), 'spark')
     ),
     scored AS (
         SELECT h.doc_id,
-               ROUND(list_sum(list_transform(list_zip(h.embedding, p.p),
-                        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+               ROUND({dot_sql("h.embedding", "p.p")}
                      / SQRT(h.esq * p.psq), 4) AS cosine4
         FROM hits h, probe p
     )
@@ -766,7 +747,7 @@ _EXACT_TOP_CTE = (
     + f""",
     exact_scored AS (
         SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-               ROUND({_DOT} / SQRT(a.nsq * b.nsq), 4) AS cos4
+               ROUND({dot_sql("a.embedding", "b.embedding")} / SQRT(a.nsq * b.nsq), 4) AS cos4
         FROM n a JOIN n b ON a.vec_id < 10 AND a.vec_id != b.vec_id
     ),
     exact_top AS (
@@ -1033,11 +1014,10 @@ _KNN_CTE = (
     _SYM_CTE
     + ","
     + _norms_cte("nv")
-    + """,
+    + f""",
     scored AS (
         SELECT s.src AS vec_id, s.dst AS neighbor_id,
-               ROUND(list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+               ROUND({dot_sql("a.embedding", "b.embedding")}
                      / SQRT(a.nsq * b.nsq), 4) AS cos4
         FROM sym s
         JOIN nv a ON a.vec_id = s.src
@@ -1073,8 +1053,7 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the 16-d random projection of ``embedding`` as a DuckDB list: a dot
 #: with each of the first 16 planes, scaled by 1 / sqrt(16)
 _PROJ_SQL = "[" + ", ".join(
-    f"ROUND(list_sum(list_transform(list_zip(embedding, {lits}), "
-    f"x -> CAST(x[1] AS DOUBLE) * x[2])) * 0.25, 6)"
+    f"ROUND({dot_sql('embedding', lits)} * 0.25, 6)"
     for lits in _planes_sql()[:16]
 ) + "]"
 
@@ -1239,7 +1218,7 @@ def sim_multiprobe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sim_negative_samples",
     oracle="WITH "
     + _LSH_BUCKETS_CTE
-    + """,
+    + f""",
     near AS (
         SELECT x.vec_id AS anchor, y.vec_id AS neighbor
         FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id != y.vec_id
@@ -1247,8 +1226,7 @@ def sim_multiprobe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     n AS (SELECT COUNT(*) AS total FROM embeddings),
     cand AS (
         SELECT s.vec_id AS anchor, t.j AS slot,
-               CAST('0x' || substring(md5('neg:' || CAST(s.vec_id AS VARCHAR)
-                    || ':' || CAST(t.j AS VARCHAR)), 1, 15) AS BIGINT)
+               {md5_long_sql("'neg:' || CAST(s.vec_id AS VARCHAR) || ':' || CAST(t.j AS VARCHAR)")}
                    % (SELECT total FROM n) AS cand_id
         FROM sig s, UNNEST(generate_series(0, 7)) AS t(j)
     )
@@ -1305,7 +1283,7 @@ def sim_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth AS (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b
         FROM nv a JOIN nv b ON a.vec_id < b.vec_id
-        WHERE ROUND({_DOT} / SQRT(a.nsq * b.nsq), 4) >= 0.4
+        WHERE ROUND({dot_sql("a.embedding", "b.embedding")} / SQRT(a.nsq * b.nsq), 4) >= 0.4
     ),
     sig AS (SELECT vec_id, CAST({{sig}} AS BIGINT) AS sig FROM embeddings),
     b AS (
@@ -1454,7 +1432,7 @@ def sim_banded_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dd_semantic_cells",
     oracle="WITH "
     + _CENT_CTE
-    + """,
+    + f""",
     cellv AS (
         SELECT a.vec_id, a.centroid_id AS cell, v.embedding, v.nsq
         FROM assign a JOIN nv v ON v.vec_id = a.vec_id
@@ -1462,8 +1440,7 @@ def sim_banded_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup AS (
         SELECT DISTINCT y.vec_id
         FROM cellv x JOIN cellv y ON x.cell = y.cell AND x.vec_id < y.vec_id
-        WHERE ROUND(list_sum(list_transform(list_zip(x.embedding, y.embedding),
-                     z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))
+        WHERE ROUND({dot_sql("x.embedding", "y.embedding")}
                     / SQRT(x.nsq * y.nsq), 4) >= 0.4
     )
     SELECT c.vec_id, c.cell, (d.vec_id IS NULL) AS kept
@@ -1565,7 +1542,7 @@ _MMR_ORACLE = (
     + f""",
     scored AS (
         SELECT a.vec_id AS p, b.vec_id AS c,
-               ROUND({_DOT} / SQRT(a.nsq * b.nsq), 4) AS rel
+               ROUND({dot_sql("a.embedding", "b.embedding")} / SQRT(a.nsq * b.nsq), 4) AS rel
         FROM n a JOIN n b ON a.vec_id < 8 AND a.vec_id != b.vec_id
     ),
     cand AS (
@@ -1575,7 +1552,7 @@ _MMR_ORACLE = (
     ),
     sims AS (
         SELECT x.p, x.c AS c1, y.c AS c2,
-               ROUND({_DOT} / SQRT(a.nsq * b.nsq), 4) AS s
+               ROUND({dot_sql("a.embedding", "b.embedding")} / SQRT(a.nsq * b.nsq), 4) AS s
         FROM cand x JOIN cand y ON x.p = y.p AND x.c != y.c
         JOIN n a ON a.vec_id = x.c
         JOIN n b ON b.vec_id = y.c
@@ -1928,12 +1905,12 @@ def sim_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_rrf_fusion",
-    oracle="""
+    oracle=f"""
     WITH kw AS (
         SELECT doc_id,
                len(list_filter(string_split(text, ' '), x -> x = 'spark'))
                    AS tf,
-               len(list_filter(string_split(text, ' '), x -> x != '')) AS n
+               len({words_sql("text")}) AS n
         FROM documents
     ),
     krank AS (
@@ -1945,16 +1922,13 @@ def sim_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         ) WHERE rk <= 20
     ),"""
     + _norms_cte("nv")
-    + """,
+    + f""",
     p AS (SELECT embedding AS pv, nsq AS psq FROM nv WHERE vec_id = 0),
     vrank AS (
         SELECT vec_id AS doc_id, rk AS vec_rank FROM (
             SELECT v.vec_id,
                    ROW_NUMBER() OVER (
-                       ORDER BY ROUND(list_sum(list_transform(
-                                    list_zip(v.embedding, p.pv),
-                                    x -> CAST(x[1] AS DOUBLE)
-                                         * CAST(x[2] AS DOUBLE)))
+                       ORDER BY ROUND({dot_sql("v.embedding", "p.pv")}
                                 / SQRT(v.nsq * p.psq), 4) DESC,
                                 v.vec_id) AS rk
             FROM nv v CROSS JOIN p
@@ -2185,16 +2159,16 @@ def sim_ivf_pq_res_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_maxsim_topk",
-    oracle="""
+    oracle=f"""
     WITH dw AS (
         SELECT DISTINCT doc_id, u AS w
         FROM (SELECT doc_id,
-                     list_filter(string_split(text, ' '), x -> x != '') AS ws
+                     {words_sql("text")} AS ws
               FROM documents), UNNEST(ws) AS t(u)
     ),
     h AS (
         SELECT doc_id, w,
-               CAST('0x' || substring(md5(w), 1, 4) AS BIGINT) % 65536 AS h16
+               {md5_long_sql("w", 4)} % 65536 AS h16
         FROM dw
     ),
     qt AS (
@@ -2430,13 +2404,12 @@ def sim_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sim_cell_medoids",
     oracle="WITH "
     + _CENT_CTE
-    + """,
+    + f""",
     mem AS MATERIALIZED (
         SELECT a.vec_id, a.centroid_id, e.embedding,
                ROW_NUMBER() OVER (
                    PARTITION BY a.centroid_id
-                   ORDER BY CAST('0x' || substring(
-                       md5(CAST(a.vec_id AS VARCHAR)), 1, 15) AS BIGINT),
+                   ORDER BY {md5_long_sql("CAST(a.vec_id AS VARCHAR)")},
                        a.vec_id
                ) AS srk
         FROM assign a JOIN embeddings e ON e.vec_id = a.vec_id
@@ -2697,12 +2670,11 @@ def sim_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_embedding_profile",
-    oracle="""
+    oracle=f"""
     WITH n AS (
         SELECT vec_id,
                CAST(len(embedding) AS INTEGER) AS dim,
-               ROUND(SQRT(list_sum(list_transform(embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 6)
+               ROUND(SQRT({norm_sq_sql("embedding")}), 6)
                    AS norm6,
                CAST(len(list_filter(embedding, x -> x = 0.0)) AS BIGINT)
                    AS n_zero_comp

@@ -12,9 +12,10 @@ from pyspark.sql import functions as F
 
 from odbc2parquet_spark import cachereg
 from odbc2parquet_spark.catalog import load_table, spread_scan
-from odbc2parquet_spark.functions.hashing import md5_long
+from odbc2parquet_spark.functions.hashing import HASH_DOMAIN, hex_long_sql, md5_long, md5_long_sql
 from odbc2parquet_spark.operators import multimodal as M
 from odbc2parquet_spark.operators import text as X
+from odbc2parquet_spark.operators.text import DEDUP_NORMAL_FORM_SQL, words, words_sql
 from odbc2parquet_spark.queries import query
 from odbc2parquet_spark.queries.dedup import (
     _INCREMENTAL_DROPPED_CTE,
@@ -38,7 +39,7 @@ from odbc2parquet_spark.queries.similarity import (
     "tx_token_stats",
     oracle=f"""
     SELECT doc_id,
-           len(list_filter(string_split(text, ' '), w -> w != '')) AS n_ws_tokens,
+           len({words_sql("text")}) AS n_ws_tokens,
            len(regexp_extract_all(text, '{X.TOKEN_RE}')) AS n_re_tokens,
            length(text) AS n_chars
     FROM documents
@@ -51,12 +52,12 @@ def tx_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_dedup_normalize",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            length(text) AS n_chars,
-           length(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')))
+           length({DEDUP_NORMAL_FORM_SQL})
                AS n_norm_chars,
-           md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')))
+           md5({DEDUP_NORMAL_FORM_SQL})
                AS norm_hash
     FROM documents
     """,
@@ -73,7 +74,7 @@ def tx_dedup_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # shared oracle SQL: the quality-score inputs of a ``documents`` row, and
 # the score over them
-_QUALITY_INPUTS = """len(list_filter(string_split(text, ' '), w -> w != '')) AS n_words,
+_QUALITY_INPUTS = f"""len({words_sql("text")}) AS n_words,
                length(text) AS n_chars,
                length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha,
                len(list_filter(string_split(text, ' '),
@@ -126,7 +127,7 @@ def tx_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lang_hits_sql(lang: str) -> str:
     markers = ", ".join(f"'{m}'" for m in X.LANG_MARKERS[lang])
     return (
-        f"len(list_filter(list_filter(string_split(text, ' '), w -> w != ''), "
+        f"len(list_filter({words_sql('text')}, "
         f"w -> w IN ({markers}))) AS hits_{lang}"
     )
 
@@ -155,14 +156,14 @@ def tx_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_fingerprint",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            list_reduce(
                list_prepend(CAST(0 AS BIGINT),
-                   list_transform(list_filter(string_split(text, ' '), w -> w != ''),
-                       w -> CAST('0x' || substring(md5(w), 1, 6) AS BIGINT))),
+                   list_transform({words_sql("text")},
+                       w -> {md5_long_sql("w", 6)})),
                (acc, h) -> (acc * 31 + h) % 1000000007) AS fingerprint,
-           len(list_filter(string_split(text, ' '), w -> w != '')) AS n_words
+           len({words_sql("text")}) AS n_words
     FROM documents
     """,
 )
@@ -271,7 +272,7 @@ _PIPE_STAGES_CTES = (
     oracle=f"""
     WITH {_PIPE_STAGES_CTES}
     SELECT e.doc_id,
-           len(list_filter(string_split(e.text, ' '), w -> w != '')) AS n_ws_tokens,
+           len({words_sql("e.text")}) AS n_ws_tokens,
            len(regexp_extract_all(e.text, '{X.TOKEN_RE}')) AS n_re_tokens,
            length(e.text) AS n_chars,
            e.quality_score
@@ -292,10 +293,10 @@ def tx_prepare_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_pack_shards",
-    oracle="""
+    oracle=f"""
     WITH t AS (
         SELECT doc_id,
-               len(list_filter(string_split(text, ' '), w -> w != '')) AS n_tokens
+               len({words_sql("text")}) AS n_tokens
         FROM documents
     )
     SELECT doc_id, n_tokens,
@@ -316,7 +317,7 @@ def tx_pack_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     with_tokens = docs.select(
         "doc_id",
-        F.size(F.filter(F.split(F.col("text"), " "), lambda w: w != "")).cast("long").alias("n_tokens"),
+        F.size(words(F.col("text"))).cast("long").alias("n_tokens"),
     )
     return pack_shards_two_pass(with_tokens)
 
@@ -324,9 +325,9 @@ def tx_pack_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "tx_bigram_surprisal",
     bench=False,
-    oracle="""
+    oracle=f"""
     WITH w AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '') AS ws
+        SELECT doc_id, {words_sql("text")} AS ws
         FROM documents
     ),
     bg AS (
@@ -355,10 +356,10 @@ def tx_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT doc_id, lang
     FROM documents
-    WHERE CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-          < CASE lang WHEN 'en' THEN {int(0.5 * (1 << 60))}
-                      WHEN 'de' THEN {int(1.0 * (1 << 60))}
-                      WHEN 'es' THEN {int(0.25 * (1 << 60))}
+    WHERE {md5_long_sql("CAST(doc_id AS VARCHAR)")}
+          < CASE lang WHEN 'en' THEN {int(0.5 * HASH_DOMAIN)}
+                      WHEN 'de' THEN {int(1.0 * HASH_DOMAIN)}
+                      WHEN 'es' THEN {int(0.25 * HASH_DOMAIN)}
                       ELSE 0 END
     """,
 )
@@ -387,7 +388,7 @@ def _rate_sample_sql(col: str) -> str:
     )
     SELECT d.doc_id, d.{col}
     FROM documents d JOIN thr ON thr.src = d.{col}
-    WHERE CAST('0x' || substring(md5(CAST(d.doc_id AS VARCHAR)), 1, 15) AS BIGINT)
+    WHERE {md5_long_sql("CAST(d.doc_id AS VARCHAR)")}
           < thr.thr
     """
 
@@ -424,9 +425,9 @@ def tx_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_repetition",
-    oracle="""
+    oracle=f"""
     WITH w AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
+        SELECT doc_id, {words_sql("text")} AS ws
         FROM documents
     ),
     b AS (
@@ -466,7 +467,7 @@ def _bigrams_cte(col: str = "u AS g") -> str:
     document's distinct adjacent word pairs ``u``, selected as ``col``)."""
     return f"""
     w AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
+        SELECT doc_id, {words_sql("text")} AS ws
         FROM documents
     ),
     g AS (
@@ -521,10 +522,10 @@ def tx_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_domain_mix",
-    oracle="""
+    oracle=f"""
     WITH per AS (
         SELECT source,
-               len(list_filter(string_split(text, ' '), x -> x <> '')) AS n
+               len({words_sql("text")}) AS n
         FROM documents
     ),
     agg AS (
@@ -546,9 +547,9 @@ def tx_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_chunk_documents",
-    oracle="""
+    oracle=f"""
     WITH w AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
+        SELECT doc_id, {words_sql("text")} AS ws
         FROM documents
     ),
     st AS (
@@ -575,10 +576,9 @@ def tx_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "mm_embed",
     bench=False,
-    oracle="""
+    oracle=f"""
     SELECT doc_id, CAST(j AS INTEGER) AS pos,
-           ROUND(CAST('0x' || substring(md5(text || ':' || CAST(j AS VARCHAR)), 1, 6)
-                      AS BIGINT) / 16777216.0, 6) AS val
+           ROUND({md5_long_sql("text || ':' || CAST(j AS VARCHAR)", 6)} / 16777216.0, 6) AS val
     FROM documents, range(0, 8) AS t(j)
     WHERE doc_id < 200
     """,
@@ -648,15 +648,15 @@ def mm_decode_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "tx_cms_word_freq",
     bench=False,
-    oracle="""
+    oracle=f"""
     WITH wf AS (
         SELECT unnest(string_split(text, ' ')) AS w FROM documents
     ),
     w2 AS (SELECT w FROM wf WHERE w != ''),
     cells AS (
         SELECT CAST(t.j AS BIGINT) AS row,
-               (CAST('0x' || substring(md5(w), 1, 15) AS BIGINT)
-                + j * CAST('0x' || substring(md5(w), 16, 15) AS BIGINT)) % 256 AS col
+               ({md5_long_sql("w")}
+                + j * {hex_long_sql("md5(w)", 16)}) % 256 AS col
         FROM w2, UNNEST(generate_series(0, 3)) AS t(j)
     ),
     sketch AS (SELECT row, col, CAST(COUNT(*) AS BIGINT) AS n
@@ -667,8 +667,8 @@ def mm_decode_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     pm AS (
         SELECT e.value, e.exact_n, CAST(t.j AS BIGINT) AS row,
-               (CAST('0x' || substring(md5(e.value), 1, 15) AS BIGINT)
-                + j * CAST('0x' || substring(md5(e.value), 16, 15) AS BIGINT)) % 256 AS col
+               ({md5_long_sql("e.value")}
+                + j * {hex_long_sql("md5(e.value)", 16)}) % 256 AS col
         FROM exact e, UNNEST(generate_series(0, 3)) AS t(j)
     )
     SELECT pm.value, CAST(MIN(COALESCE(s.n, 0)) AS BIGINT) AS est, pm.exact_n
@@ -704,9 +704,9 @@ def tx_cms_word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "tx_tfidf_density",
     bench=False,
-    oracle="""
+    oracle=f"""
     WITH occ AS (
-        SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> x != '')) AS w
+        SELECT doc_id, unnest({words_sql("text")}) AS w
         FROM documents
     ),
     dfreq AS (
@@ -731,7 +731,7 @@ def tx_tfidf_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     occ = docs.select(
         "doc_id",
-        F.explode(F.filter(F.split(F.col("text"), " "), lambda w: w != "")).alias("w"),
+        F.explode(words(F.col("text"))).alias("w"),
     )
     dfreq = occ.distinct().groupBy("w").agg(F.count("*").alias("df"))
     n = docs.agg(F.count("*").alias("n_docs"))
@@ -865,9 +865,9 @@ def tx_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_length_histogram",
-    oracle="""
+    oracle=f"""
     WITH n AS (
-        SELECT len(list_filter(string_split(text, ' '), w -> w != '')) AS n_tokens
+        SELECT len({words_sql("text")}) AS n_tokens
         FROM documents
     )
     SELECT CAST(FLOOR(n_tokens / 16) * 16 AS BIGINT) AS bucket_start,
@@ -902,7 +902,7 @@ def tx_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_epoch_shuffle",
-    oracle="""
+    oracle=f"""
     WITH keyed AS (
         SELECT e.epoch, d.doc_id,
                md5(CAST(e.epoch AS VARCHAR) || ':' || CAST(d.doc_id AS VARCHAR)) AS k
@@ -910,7 +910,7 @@ def tx_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     sharded AS (
         SELECT epoch, doc_id, k,
-               CAST('0x' || substring(k, 1, 8) AS BIGINT) % 8 AS shard
+               {hex_long_sql("k", 1, 8)} % 8 AS shard
         FROM keyed
     )
     SELECT epoch, doc_id, shard,
@@ -932,11 +932,11 @@ def tx_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_tokenize_vocab",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id, i - 1 AS pos, ws[i] AS w
         FROM (SELECT doc_id,
-                     list_filter(string_split(text, ' '), x -> x != '') AS ws
+                     {words_sql("text")} AS ws
               FROM documents),
              UNNEST(generate_series(1, len(ws))) AS t(i)
     ),
@@ -991,11 +991,10 @@ def mm_decode_video(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_train_val_split",
-    oracle="""
+    oracle=f"""
     WITH assigned AS (
         SELECT doc_id, source,
-               CAST('0x' || substring(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 15)
-                    AS BIGINT) % 100 AS slot
+               {md5_long_sql("'split:' || CAST(doc_id AS VARCHAR)")} % 100 AS slot
         FROM documents
     )
     SELECT source,
@@ -1036,11 +1035,11 @@ def tx_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_cooccurrence_lift",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id, i AS pos, ws[i] AS w
         FROM (SELECT doc_id,
-                     list_filter(string_split(text, ' '), x -> x != '') AS ws
+                     {words_sql("text")} AS ws
               FROM documents),
              UNNEST(generate_series(1, len(ws))) AS t(i)
     ),
@@ -1166,10 +1165,9 @@ def tx_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_dsir_weights",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-        SELECT doc_id, source, unnest(list_filter(string_split(text, ' '),
-                                                  x -> x != '')) AS w
+        SELECT doc_id, source, unnest({words_sql("text")}) AS w
         FROM documents
     ),
     corpus AS (SELECT w, COUNT(*) AS cc FROM toks GROUP BY w),
@@ -1231,9 +1229,9 @@ def tx_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_bm25_topk",
-    oracle="""
+    oracle=f"""
     WITH occ AS (
-        SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> x != '')) AS w
+        SELECT doc_id, unnest({words_sql("text")}) AS w
         FROM documents
     ),
     dl AS (SELECT doc_id, COUNT(*) AS dl FROM occ GROUP BY doc_id),
@@ -1279,7 +1277,7 @@ def tx_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     occ = docs.select(
         "doc_id",
-        F.explode(F.filter(F.split(F.col("text"), " "), lambda w: w != "")).alias("w"),
+        F.explode(words(F.col("text"))).alias("w"),
     )
     # ONE tokenize+shuffle: per-(doc, word) counts feed BOTH the doc
     # lengths (sum over words) and the query-term tf rows — deriving dl
@@ -1540,12 +1538,10 @@ _FRAME_DIGEST_CTES = (
 #: sample's bytes
 _FRAME_SIG_CTES = (
     _frame_bytes_cte()
-    + """,
+    + f""",
     d AS (
         SELECT doc_id, i,
-               CAST('0x' || substring(
-                   md5(string_agg(CAST(byte AS VARCHAR), ',' ORDER BY off)),
-                   1, 15) AS BIGINT) AS sig
+               {md5_long_sql("string_agg(CAST(byte AS VARCHAR), ',' ORDER BY off)")} AS sig
         FROM b GROUP BY doc_id, i
     )"""
 )
@@ -1701,11 +1697,11 @@ def mm_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_bpe_pairs",
-    oracle="""
+    oracle=f"""
     WITH wd AS (
         SELECT w AS word, COUNT(*) AS wc
         FROM documents,
-             UNNEST(list_filter(string_split(text, ' '), x -> x != '')) AS t(w)
+             UNNEST({words_sql("text")}) AS t(w)
         GROUP BY w
     ),
     sym AS (SELECT word, wc, string_split(word, '') AS s FROM wd),
@@ -1739,12 +1735,12 @@ def tx_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # shared oracle CTEs: signed 16-bucket feature hashing of each document's
 # words, densified over every document
-_HASH_EMBED_CTE = """
+_HASH_EMBED_CTE = f"""
     toks AS (
         SELECT doc_id,
-               CAST('0x' || substring(md5(w), 1, 15) AS BIGINT) AS h1
+               {md5_long_sql("w")} AS h1
         FROM documents,
-             UNNEST(list_filter(string_split(text, ' '), x -> x != '')) AS t(w)
+             UNNEST({words_sql("text")}) AS t(w)
     ),
     sums AS (
         SELECT doc_id, h1 % 16 AS bucket,
@@ -1963,11 +1959,10 @@ def tx_bpe_learn50(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_pps_sample",
-    oracle="""
+    oracle=f"""
     WITH keyed AS (
         SELECT doc_id, CAST(n_chars AS BIGINT) AS w,
-               CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-                    AS BIGINT) AS h
+               {md5_long_sql("CAST(doc_id AS VARCHAR)")} AS h
         FROM documents
     ),
     tot AS (SELECT SUM(w) AS tw FROM keyed),
@@ -2045,7 +2040,7 @@ def tx_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     wc = (
         docs.select(
             F.explode(
-                F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+                words(F.col("text"))
             ).alias("w")
         )
         .groupBy("w")
@@ -2135,7 +2130,7 @@ def tx_keyword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(
             "doc_id",
             F.explode(
-                F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+                words(F.col("text"))
             ).alias("w"),
         )
         .groupBy("doc_id", "w")
@@ -2287,12 +2282,11 @@ def mm_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_reservoir_sample",
-    oracle="""
+    oracle=f"""
     WITH a AS (
         SELECT lang, doc_id, n_chars,
                ROUND(LN(
-                   (CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-                         AS BIGINT) + 1) / 1152921504606846976.0), 9)
+                   ({md5_long_sql("CAST(doc_id AS VARCHAR)")} + 1) / {HASH_DOMAIN}.0), 9)
                    / n_chars AS score
         FROM documents WHERE n_chars > 0
     ),
@@ -2326,7 +2320,7 @@ def tx_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "tx_novelty",
     oracle="WITH "
-    + _bigrams_cte("CAST('0x' || substring(md5(u), 1, 15) AS BIGINT) AS gh")
+    + _bigrams_cte(md5_long_sql("u") + " AS gh")
     + """,
     f AS (
         SELECT doc_id, gh,
@@ -2355,10 +2349,9 @@ def tx_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_kfold_assign",
-    oracle="""
+    oracle=f"""
     SELECT lang,
-           CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-                AS BIGINT) % 5 AS fold,
+           {md5_long_sql("CAST(doc_id AS VARCHAR)")} % 5 AS fold,
            COUNT(*) AS n_rows
     FROM documents
     GROUP BY 1, 2
@@ -2407,10 +2400,10 @@ def tx_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mm_video_neardup",
     oracle="WITH "
     + _FRAME_DIGEST_CTES
-    + """,
+    + f""",
     shh AS (
         SELECT DISTINCT doc_id AS id,
-               CAST('0x' || substring(md5(g), 1, 15) AS BIGINT) AS gh
+               {md5_long_sql("g")} AS gh
         FROM d
     ),"""
     + _prefix_jaccard_sql(3),
@@ -2442,7 +2435,7 @@ def mm_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mm_audio_neardup",
     oracle="WITH "
     + _audio_pcm_cte("t.j", "j")
-    + """,
+    + f""",
     w AS (
         SELECT doc_id, j // 64 AS widx,
                SUM(CAST(v AS BIGINT) * v) AS energy
@@ -2450,13 +2443,12 @@ def mm_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     shh AS (
         SELECT DISTINCT doc_id AS id,
-               CAST('0x' || substring(md5(
-                   CAST(widx AS VARCHAR) || ':'
-                   || CAST(length(bin(energy + 1)) AS VARCHAR) || ':'
-                   || CAST((energy + 1) // CAST(POWER(2,
-                          GREATEST(length(bin(energy + 1)) - 6, 0))
-                          AS BIGINT) AS VARCHAR)), 1, 15)
-                 AS BIGINT) AS gh
+               {md5_long_sql(
+                   "CAST(widx AS VARCHAR) || ':'"
+                   " || CAST(length(bin(energy + 1)) AS VARCHAR) || ':'"
+                   " || CAST((energy + 1) // CAST(POWER(2,"
+                   " GREATEST(length(bin(energy + 1)) - 6, 0)) AS BIGINT) AS VARCHAR)"
+               )} AS gh
         FROM w
     ),"""
     + _prefix_jaccard_sql(4),
@@ -2482,9 +2474,9 @@ def mm_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # shared oracle CTEs: each document's words, its adjacent word pairs, and
 # the corpus pair and context counts
-_BIGRAM_COUNTS_CTE = """
+_BIGRAM_COUNTS_CTE = f"""
     w AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '') AS ws
+        SELECT doc_id, {words_sql("text")} AS ws
         FROM documents
     ),
     bg AS (
@@ -2568,10 +2560,10 @@ def tx_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _lm_terciles(lm, Window.orderBy(F.desc("avg_logprob"), F.asc("doc_id")), "doc_id")
 
 
-_GOPHER_CTE = """
+_GOPHER_CTE = f"""
     gw AS (
         SELECT doc_id, text,
-               list_filter(string_split(text, ' '), x -> x != '') AS ws,
+               {words_sql("text")} AS ws,
                string_split(text, chr(10)) AS lines
         FROM documents
     ),
@@ -2891,12 +2883,12 @@ def mm_image_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # shared oracle CTEs: multinomial naive Bayes language scores, trained on
 # the even doc_ids and evaluated on the odd ones
-_NB_SCORES_CTE = """
+_NB_SCORES_CTE = f"""
     train AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
     ev AS (SELECT * FROM documents WHERE doc_id % 2 = 1),
     tt AS (
         SELECT lang AS label, u AS w
-        FROM (SELECT lang, list_filter(string_split(text, ' '), x -> x != '') AS ws
+        FROM (SELECT lang, {words_sql("text")} AS ws
               FROM train), UNNEST(ws) AS t(u)
     ),
     cwl AS (SELECT label, w, COUNT(*) AS c FROM tt GROUP BY label, w),
@@ -2906,7 +2898,7 @@ _NB_SCORES_CTE = """
     tot AS (SELECT COUNT(*) AS td FROM train),
     te AS (
         SELECT doc_id, u AS w
-        FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '') AS ws
+        FROM (SELECT doc_id, {words_sql("text")} AS ws
               FROM ev), UNNEST(ws) AS t(u)
     ),
     sc AS (
@@ -2959,9 +2951,9 @@ def tx_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_source_overlap",
-    oracle="""
+    oracle=f"""
     WITH w AS (
-        SELECT source, list_filter(string_split(text, ' '), x -> x != '') AS ws
+        SELECT source, {words_sql("text")} AS ws
         FROM documents
     ),
     g AS (
@@ -3227,9 +3219,9 @@ def mm_audio_tone(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_stupid_backoff",
-    oracle="""
+    oracle=f"""
     WITH w AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '') AS ws
+        SELECT doc_id, {words_sql("text")} AS ws
         FROM documents
     ),
     tr AS (SELECT ws FROM w WHERE doc_id % 2 = 0),
@@ -3315,10 +3307,10 @@ def tx_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_neg_sample_table",
-    oracle="""
+    oracle=f"""
     WITH cnt AS (
         SELECT u AS w, COUNT(*) AS c
-        FROM (SELECT list_filter(string_split(text, ' '), x -> x != '') AS ws
+        FROM (SELECT {words_sql("text")} AS ws
               FROM documents), UNNEST(ws) AS t(u)
         GROUP BY u
     ),
@@ -3410,14 +3402,14 @@ def mm_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_hash_collisions",
-    oracle="""
+    oracle=f"""
     WITH w AS (
         SELECT DISTINCT u AS w
-        FROM (SELECT list_filter(string_split(text, ' '), x -> x != '') AS ws
+        FROM (SELECT {words_sql("text")} AS ws
               FROM documents), UNNEST(ws) AS t(u)
     ),
     h AS (
-        SELECT w, CAST('0x' || substring(md5(w), 1, 15) AS BIGINT) AS h1
+        SELECT w, {md5_long_sql("w")} AS h1
         FROM w
     ),
     dims AS (SELECT UNNEST([64, 256, 1024]) AS dim),
@@ -3487,10 +3479,10 @@ def tx_hash_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_conformal_interval",
-    oracle="""
+    oracle=f"""
     WITH f AS (
         SELECT doc_id,
-               len(list_filter(string_split(text, ' '), x -> x != ''))
+               len({words_sql("text")})
                    AS x,
                length(text) AS y
         FROM documents
@@ -3765,10 +3757,10 @@ def mm_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mm_video_align",
     oracle="WITH "
     + _FRAME_DIGEST_CTES
-    + """,
+    + f""",
     lm AS (
         SELECT doc_id, CAST(i AS BIGINT) AS fi,
-               CAST('0x' || substring(md5(g), 1, 15) AS BIGINT) AS l
+               {md5_long_sql("g")} AS l
         FROM d
     ),"""
     + _landmark_votes_sql(7),
@@ -3805,12 +3797,11 @@ def mm_video_align(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_ht_estimate",
-    oracle="""
+    oracle=f"""
     WITH keyed AS (
         SELECT doc_id, CAST(n_chars AS BIGINT) AS w,
-               CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-                    AS BIGINT) AS h,
-               CAST(len(list_filter(string_split(text, ' '), x -> x != ''))
+               {md5_long_sql("CAST(doc_id AS VARCHAR)")} AS h,
+               CAST(len({words_sql("text")})
                     AS BIGINT) AS y
         FROM documents
     ),
@@ -3859,7 +3850,7 @@ def tx_ht_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     y = docs.select(
         "doc_id",
-        F.size(F.filter(F.split(F.col("text"), " "), lambda x: x != ""))
+        F.size(words(F.col("text")))
         .cast("long")
         .alias("y"),
     )
@@ -4124,11 +4115,11 @@ def mm_hash_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_keyness",
-    oracle="""
+    oracle=f"""
     WITH w AS (
         SELECT source, u AS word
         FROM documents,
-             UNNEST(list_filter(string_split(text, ' '), x -> x != '')) AS t(u)
+             UNNEST({words_sql("text")}) AS t(u)
     ),
     cnt AS (
         SELECT source, word, CAST(COUNT(*) AS BIGINT) AS y
@@ -4179,7 +4170,7 @@ def tx_keyness(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = docs.select(
         "source",
         F.explode(
-            F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+            words(F.col("text"))
         ).alias("word"),
     )
     cnt = w.groupBy("source", "word").agg(F.count(F.lit(1)).alias("y"))
@@ -4286,26 +4277,26 @@ def tx_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: the hash of the 13-word gram of ``ws`` starting at word ``i``
+_GRAM13 = md5_long_sql("array_to_string(list_slice(ws, i, i + 12), ' ')")
+
+
 @query(
     "tx_decontaminate_13gram",
-    oracle="""
+    oracle=f"""
     WITH ws AS (
         SELECT doc_id, source,
-               list_filter(string_split(text, ' '), x -> x != '') AS ws
+               {words_sql("text")} AS ws
         FROM documents
     ),
     eg AS (
-        SELECT DISTINCT CAST('0x' || substring(md5(
-                   array_to_string(list_slice(ws, i, i + 12), ' ')
-               ), 1, 15) AS BIGINT) AS h
+        SELECT DISTINCT {_GRAM13} AS h
         FROM ws, UNNEST(generate_series(1, len(ws) - 12)) AS t(i)
         WHERE doc_id % 97 = 0 AND len(ws) >= 13
     ),
     dg AS (
         SELECT DISTINCT doc_id,
-               CAST('0x' || substring(md5(
-                   array_to_string(list_slice(ws, i, i + 12), ' ')
-               ), 1, 15) AS BIGINT) AS h
+               {_GRAM13} AS h
         FROM ws, UNNEST(generate_series(1, len(ws) - 12)) AS t(i)
         WHERE doc_id % 97 != 0 AND len(ws) >= 13
     ),
@@ -4339,7 +4330,7 @@ def tx_decontaminate_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     ws = docs.select(
         "doc_id",
-        F.filter(F.split(F.col("text"), " "), lambda x: x != "").alias("ws"),
+        words(F.col("text")).alias("ws"),
     )
     gram = F.explode(
         F.expr(
@@ -4390,13 +4381,6 @@ def tx_decontaminate_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("keep_doc"),
         )
     )
-
-
-_GRAM13 = (
-    "CAST('0x' || substring(md5("
-    "array_to_string(list_slice(ws, i, i + 12), ' ')"
-    "), 1, 15) AS BIGINT)"
-)
 
 
 def _contaminated_cte(w: str, where: str = "") -> str:
@@ -4542,10 +4526,10 @@ def tx_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_ccnet_crosslm",
-    oracle="""
+    oracle=f"""
     WITH w AS (
         SELECT doc_id, source,
-               list_filter(string_split(text, ' '), x -> x != '') AS ws
+               {words_sql("text")} AS ws
         FROM documents
     ),
     tb AS (
@@ -4603,11 +4587,10 @@ def tx_ccnet_crosslm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_ccnet_cutpoints",
-    oracle="WITH " + _LM_CTE + """,
+    oracle="WITH " + _LM_CTE + f""",
     hk AS (
         SELECT doc_id, avg_logprob,
-               CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-                    AS BIGINT) AS hk
+               {md5_long_sql("CAST(doc_id AS VARCHAR)")} AS hk
         FROM lm
     ),
     samp AS (
@@ -4706,7 +4689,7 @@ def _curation_delta_oracle() -> str:
         WHERE doc_id >= 250 AND doc_id NOT IN (SELECT new_id FROM dropped)
     ),
     wq AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '') AS ws
+        SELECT doc_id, {words_sql("text")} AS ws
         FROM documents
     ),
     tb AS (

@@ -334,6 +334,16 @@ def test_cli_jdbc_url_rejects_params():
                       "in.par", "t"], "--dbapi may not be combined", id="dbapi-and-jdbc-url"),
         pytest.param(["insert", "--dbapi", "sqlite3", "--dsn", "x", "in.par", "t"],
                      "--dbapi may not be combined", id="dbapi-and-dsn"),
+        *[
+            pytest.param([*source, flag, "x", *rest],
+                         "--user and --password need --jdbc-url or --dsn",
+                         id=f"{source[0]}-{source[1][2:]}{flag}")
+            for source, rest in (
+                (["query", "--tables-dir", "."], ["out.par", "SELECT 1"]),
+                (["insert", "--dbapi", "sqlite3"], ["in.par", "t"]),
+            )
+            for flag in ("--user", "--password")
+        ],
         pytest.param(["insert", "--tables-dir", ".", "--dbapi", "sqlite3", "in.par", "t"],
                      "unrecognized arguments: --tables-dir", id="insert-tables-dir"),
         pytest.param(["exec", "--tables-dir", ".", "--dbapi", "sqlite3", "in.par", "X"],

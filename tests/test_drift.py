@@ -249,18 +249,21 @@ def test_covariance_large_magnitude_chunked_exact(spark):
 def test_two_pass_ops_leave_no_persistent_rdds(spark):
     """The two-pass prefix-sum family must not pin blocks in the session
     cache manager (localCheckpoint, not persist): after running each
-    operator to completion the persistent-RDD registry is empty."""
+    operator to completion the persistent-RDD registry holds nothing it
+    did not hold before (an earlier test in the session may have left
+    its own registrations)."""
     from odbc2parquet_spark.operators.ranges import sweep_line_concurrency
     from odbc2parquet_spark.operators.sampling import pps_sample
     from odbc2parquet_spark.operators.sharding import pack_shards_two_pass
 
+    before = _persistent_rdd_ids(spark)
     df = spark.createDataFrame([(i, (i * 7) % 5 + 1) for i in range(300)], ["doc_id", "x"])
     prefix_sums(df, ["doc_id"], ["x"]).count()
     iv = spark.createDataFrame([(i, i + 3) for i in range(300)], ["s", "e"])
     sweep_line_concurrency(iv).count()
     pack_shards_two_pass(df.withColumnRenamed("x", "n_tokens")).count()
     pps_sample(df.withColumnRenamed("x", "n_chars")).count()
-    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == 0
+    assert _persistent_rdd_ids(spark) - before == set()
 
 
 def _persistent_rdd_ids(spark):

@@ -7,12 +7,21 @@ written once: no run of 6 string-literal lines in ``queries/``, and no
 run of 6 code lines anywhere in the package, may be pasted at a second
 place; and the md5 hash family is spelled in one module,
 ``functions/hashing.py``, the only place that calls ``conv``.
+
+The idioms the Spark side shares with the oracles (the md5 hash, the
+whitespace words, the dedup normal form, the dot product and the squared
+norm) are spelled once per engine: each oracle builds them from the
+``_sql`` twin beside the Spark helper, so no string literal in
+``queries/`` spells one inline, and no code outside ``text.words`` splits
+on spaces and filters the empty pieces. ``test_sql_twins.py`` checks that
+each pair agrees.
 """
 
 from __future__ import annotations
 
 import ast
 import os
+import re
 from pathlib import Path
 
 import duckdb
@@ -167,3 +176,67 @@ def test_only_the_hash_module_calls_conv():
         and getattr(node.func, "attr", getattr(node.func, "id", None)) == "conv"
     ]
     assert not calls, "hash through functions/hashing.py instead: " + ", ".join(calls)
+
+
+# The idioms the Spark side and the oracles share, as DuckDB spells them;
+# an oracle builds each from the twin named here instead.
+IDIOMS = {
+    "md5 hash (functions/hashing.md5_long_sql, hex_long_sql)": r"CAST\(\s*'0x'\s*\|\|",
+    "whitespace words (operators/text.words_sql)": (
+        r"string_split\([^()]*,\s*' '\)\s*,\s*(\w+)\s*->\s*\1\s*(?:!=|<>)\s*''"
+    ),
+    "dedup normal form (operators/text.DEDUP_NORMAL_FORM_SQL)": r"regexp_replace\(\s*lower\(",
+    "dot product (operators/similarity.dot_sql)": (
+        r"(\w+)\[1\]\s+AS\s+DOUBLE\s*\)\s*\*\s*(?:CAST\(\s*)?\1\[2\]"
+    ),
+    "squared norm (operators/similarity.norm_sq_sql)": (
+        r"(\w+)\s*->\s*CAST\(\s*\1\s+AS\s+DOUBLE\s*\)\s*\*\s*CAST\(\s*\1\s+AS\s+DOUBLE"
+    ),
+}
+
+
+def inline_idioms() -> list[str]:
+    """``file:line: idiom`` for every spelling of a shared idiom in a
+    string literal of ``queries/`` (the line of the literal's start), and
+    for every filtered whitespace split ``F.filter(F.split(..., " "), ...)``
+    in the package outside ``text.words``."""
+    found = []
+    for path in sorted(QUERIES_DIR.glob("*.py")):
+        found += [
+            f"queries/{path.name}:{node.lineno}: {idiom}"
+            for node in ast.walk(ast.parse(path.read_text(), str(path)))
+            if isinstance(node, ast.Constant) and isinstance(node.value, str)
+            for idiom, pattern in IDIOMS.items()
+            for _ in re.finditer(pattern, node.value)
+        ]
+    for path in sorted(PACKAGE_DIR.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        name = path.relative_to(PACKAGE_DIR).as_posix()
+        home = {
+            line
+            for node in tree.body
+            if name == "operators/text.py" and getattr(node, "name", None) == "words"
+            for line in range(node.lineno, node.end_lineno + 1)
+        }
+        found += [
+            f"{name}:{node.lineno}: filtered whitespace split (operators/text.words)"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and getattr(node.func, "attr", None) == "filter"
+            and node.args
+            and isinstance(node.args[0], ast.Call)
+            and getattr(node.args[0].func, "attr", None) == "split"
+            and len(node.args[0].args) == 2
+            and isinstance(node.args[0].args[1], ast.Constant)
+            and node.args[0].args[1].value == " "
+            and node.lineno not in home
+        ]
+    return found
+
+
+def test_shared_idioms_are_spelled_once():
+    """Each idiom the Spark side and the oracles share has one spelling per
+    engine, in the module of its Spark helper; an inline copy in an oracle
+    string or a second Spark-side word split is a second spelling."""
+    found = inline_idioms()
+    assert not found, f"{len(found)} inline spellings; use the named helper: " + "; ".join(found)
